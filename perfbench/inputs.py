@@ -16,7 +16,6 @@ from __future__ import annotations
 import base64
 import json
 import os
-import random
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -108,46 +107,3 @@ def warmup_body() -> bytes:
         {"documents": [{"url": u, "html_base64": base64.b64encode(h).decode("ascii")} for u, h in zip(df["url"], df["html"])]}
     ).encode("utf-8")
 
-
-# Corpus-operator table: the ``documents`` schema the registered queries
-# read (doc_id, text, lang, source, n_chars), shaped like the synthetic
-# test tables of TESTDATA.md: 31-word vocabulary, 10-100 words per doc,
-# 20 sources, and 5% near-duplicates (a copy of another doc plus " dup").
-_VOCAB = (
-    "spark window merge table column vector stream value data small join "
-    "filter big group hash customer sort order slow line part fast row the "
-    "agg key query a scan batch"
-).split()
-_LANGS = (("en", 0.41), ("zh", 0.15), ("es", 0.15), ("fr", 0.15), ("de", 0.14))
-
-
-def corpus_table_dir(seed: int, n_docs: int) -> str:
-    """Directory holding ``documents.parquet``, the layout the registered
-    queries read (``<sf_dir>/documents.parquet``)."""
-    def build(path: str) -> None:
-        rng = random.Random(seed * 7919 + n_docs)
-        texts, langs = [], []
-        for _ in range(n_docs):
-            x, acc, lang = rng.random(), 0.0, "en"
-            for name, p in _LANGS:
-                acc += p
-                if x < acc:
-                    lang = name
-                    break
-            langs.append(lang)
-            texts.append(" ".join(rng.choice(_VOCAB) for _ in range(rng.randint(10, 99))))
-        for i in rng.sample(range(n_docs), n_docs // 20):
-            texts[i] = texts[rng.randrange(n_docs)] + " dup"
-        table = pa.table(
-            {
-                "doc_id": pa.array(range(n_docs), pa.int64()),
-                "text": texts,
-                "lang": langs,
-                "source": [f"src{i % 20}" for i in range(n_docs)],
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        )
-        pq.write_table(table, path)
-
-    path = _cached(os.path.join(f"corpus_s{seed}_n{n_docs}", "documents.parquet"), build)
-    return os.path.dirname(path)

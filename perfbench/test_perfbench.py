@@ -113,6 +113,33 @@ def test_self_time_subtracts_covered_children(monkeypatch):
     assert tr.self_by_name(0) == {"root": 7.0, "a": 2.0, "b": 2.0}
 
 
+@pytest.mark.parametrize("loop_gap, closes", [(0.5, True), (2.0, False)])
+def test_ledger_closure_counts_uncovered_loop_time(monkeypatch, loop_gap, closes):
+    # job 0 .. 10 holds the loop 0 .. 10; the loop's one child covers all
+    # but loop_gap seconds of it
+    clock = iter([0.0, 0.0, loop_gap, 10.0, 10.0, 10.0])
+    monkeypatch.setattr(C.time, "perf_counter", lambda: next(clock))
+    tr = C.Tracer(True)
+    with tr.span("job"):
+        with tr.span(ledger.RRE):
+            with tr.span("operators.checkpoint.bucket_write"):
+                pass
+    closed, unattributed = ledger.closure(tr, 0)
+    assert unattributed == loop_gap
+    assert closed == pytest.approx(1 - loop_gap / 10)
+    assert (closed >= ledger.CLOSURE_MIN) is closes
+
+
+def test_corpus_table_is_the_sf0_01_test_table():
+    from deepseek_ocr_api_rs_spark.conf import testdata_dir
+
+    original = os.path.join(testdata_dir("0.01"), "documents.parquet")
+    if not os.path.exists(original):
+        pytest.skip("the sf0.01 test tables are not present")
+    with open(original, "rb") as a, open(os.path.join(corpus.TABLE_DIR, "documents.parquet"), "rb") as b:
+        assert a.read() == b.read()
+
+
 def test_disabled_tracer_records_nothing():
     tr = C.Tracer(False)
     with tr.span("x") as sp:
