@@ -3404,7 +3404,7 @@ from documents order by doc_id
 def _dim_keyed_payloads(
     docs: DataFrame, synthesize, period: int
 ) -> DataFrame:
-    """Fixture-synthesis dedup (guide §8 'compute on small rows, attach by
+    """Fixture-synthesis dedup (guide §3.1 'compute on small rows, attach by
     broadcast'): the synthesizer derives every payload byte from doc_id
     through moduli that all divide ``period``, so payload(d) ==
     payload(d mod period) by construction. Synthesize ONCE per distinct
@@ -7253,6 +7253,6 @@ def oracle_sql() -> dict[str, str]:
         # when pinned operator behavior intentionally changes.
         **{
             name: _goldens.values_oracle(name)
-            for name in _goldens.ROWS
+            for name in _goldens.load()["ROWS"]
         },
     }

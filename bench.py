@@ -34,9 +34,9 @@ def _bench_corpus(spark, n_docs: int, cache_dir: str = "/tmp/spark_graft_bench")
     to serial; cached across bench invocations AND parallelism levels so
     local[8] and local[32] read the exact same bytes.
     """
-    from deepseek_ocr_api_rs_spark.fixtures.corpus import _compat_version
+    from deepseek_ocr_api_rs_spark.fixtures.corpus import CORPUS_VERSION
 
-    path = os.path.join(cache_dir, f"docs_v{_compat_version()}_{n_docs}.parquet")
+    path = os.path.join(cache_dir, f"docs_v{CORPUS_VERSION}_{n_docs}.parquet")
     done_marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(done_marker):
         return path
@@ -373,8 +373,8 @@ def main() -> None:
     # null — the line's FRONT, with "value", was cut off). Emit a short
     # FINAL line carrying the contract fields (metric/value/unit/queries/
     # sf) plus the headline scalars, so the tail window always ends with
-    # a complete, parseable JSON record. scripts/bench_common.py merges
-    # both lines (detail first, headline last).
+    # a complete, parseable JSON record. scripts/scaling_bench.py reads
+    # this last line.
     headline = {
         k: result[k]
         for k in (

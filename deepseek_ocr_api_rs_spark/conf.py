@@ -78,13 +78,19 @@ def build_session(
 
 def package_zip() -> str:
     """Zip this package for --py-files-style shipping (north_rule:
-    'packaged for spark-submit --py-files'). Cached per process."""
+    'packaged for spark-submit --py-files'). Cached per process.
+
+    Only ``.py`` files ship: data files such as the driver-side oracle
+    goldens never reach executors. The zip is built under a temporary name
+    and renamed into place, so a build that fails part-way leaves no
+    truncated zip for the cache check to pass on."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
         tempfile.gettempdir(), f"deepseek_ocr_api_rs_spark-{os.getpid()}.zip"
     )
     if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
+        tmp_path = zip_path + ".tmp"
+        with zipfile.ZipFile(tmp_path, "w", zipfile.ZIP_DEFLATED) as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in sorted(files):
                     if not fn.endswith(".py"):
@@ -95,6 +101,7 @@ def package_zip() -> str:
                         os.path.relpath(full, pkg_dir),
                     )
                     zf.write(full, rel)
+        os.replace(tmp_path, zip_path)
     return zip_path
 
 

@@ -156,6 +156,21 @@ def pool_html_blocks(html_docs: list[tuple[int, str]]) -> BlockPool:
     )
 
 
+def _join_blocks(blocks: list[str]) -> tuple[str, list[int], list[int]]:
+    """Join blocks with ``FT.BLOCK_SEPARATOR``; return the joined text and
+    each block's [start, end) offsets in it (before normalization)."""
+    sep_len = len(FT.BLOCK_SEPARATOR)
+    starts: list[int] = []
+    ends: list[int] = []
+    off = 0
+    for t in blocks:
+        starts.append(off)
+        off += len(t)
+        ends.append(off)
+        off += sep_len
+    return FT.BLOCK_SEPARATOR.join(blocks), starts, ends
+
+
 def extract_batch(payloads: Sequence[bytes | None]) -> pd.DataFrame:
     """Extract a batch of raw documents → doc-level pandas DataFrame.
 
@@ -208,21 +223,8 @@ def extract_batch(payloads: Sequence[bytes | None]) -> pd.DataFrame:
             # third branch (dots analogue): plain-text/Markdown
             # passthrough — paragraph blocks, ALL accepted, no scorer
             blocks = MD.markdown_blocks(decoded)
-            parts: list[str] = []
-            ss: list[int] = []
-            se: list[int] = []
-            off = 0
-            sep_len_md = len(FT.BLOCK_SEPARATOR)
-            for t in blocks:
-                if parts:
-                    off += sep_len_md
-                parts.append(t)
-                ss.append(off)
-                se.append(off + len(t))
-                off += len(t)
-            texts[i] = normalize_text(FT.BLOCK_SEPARATOR.join(parts))
-            span_starts[i] = ss
-            span_ends[i] = se
+            joined, span_starts[i], span_ends[i] = _join_blocks(blocks)
+            texts[i] = normalize_text(joined)
             branch[i] = "text"
             n_total[i] = len(blocks)
             n_acc[i] = len(blocks)
@@ -233,27 +235,13 @@ def extract_batch(payloads: Sequence[bytes | None]) -> pd.DataFrame:
         # order (pool rows are already (doc, block)-ordered)
         bounds = np.flatnonzero(np.diff(pool.doc_idx, prepend=-1)) if len(pool.doc_idx) else np.array([], dtype=np.int64)
         starts = list(bounds) + [len(pool.doc_idx)]
-        sep_len = len(FT.BLOCK_SEPARATOR)
         for s_i in range(len(starts) - 1):
             lo, hi = starts[s_i], starts[s_i + 1]
             doc_i = int(pool.doc_idx[lo])
             acc = pool.accepted[lo:hi]
-            parts = []
-            ss, se = [], []
-            off = 0
-            for j in range(lo, hi):
-                if not pool.accepted[j]:
-                    continue
-                if parts:
-                    off += sep_len
-                t = pool.texts[j]
-                parts.append(t)
-                ss.append(off)
-                se.append(off + len(t))
-                off += len(t)
-            texts[doc_i] = normalize_text(FT.BLOCK_SEPARATOR.join(parts))
-            span_starts[doc_i] = ss
-            span_ends[doc_i] = se
+            kept = [t for t, a in zip(pool.texts[lo:hi], acc) if a]
+            joined, span_starts[doc_i], span_ends[doc_i] = _join_blocks(kept)
+            texts[doc_i] = normalize_text(joined)
             branch[doc_i] = "html"
             n_total[doc_i] = hi - lo
             n_acc[doc_i] = int(acc.sum())

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import datetime as dt
 import json
-import os
 import random
 
 import pandas as pd
@@ -42,14 +41,6 @@ SEED = 42
 # WHATWG sniff (extraction/charset.py, r7) to the html branch
 CORPUS_VERSION = 12
 
-
-def _compat_version() -> int:
-    """Bench-only knob: SPARK_GRAFT_CORPUS_COMPAT=3 regenerates the v3
-    grammar (no modern-PDF slice) so scripts/corpus_cost.py can isolate the
-    cost of a corpus change from code changes (VERDICT r3 #8). Read at
-    call time so executors (which inherit the driver's env in local mode)
-    see the same value; production paths never set it."""
-    return int(os.environ.get("SPARK_GRAFT_CORPUS_COMPAT", CORPUS_VERSION))
 
 HOT_HOSTS = ["bigportal.example.com", "megablog.example.net"]
 COLD_HOST_COUNT = 200
@@ -234,7 +225,7 @@ def _pdf_doc(rng: random.Random) -> bytes:
             compress=roll < 0.25,
             use_tj_every=3 if roll < 0.125 else 0,
         )
-    if roll < 0.5 and _compat_version() >= 4:
+    if roll < 0.5:
         # modern third-party dialect: xref stream + predictor, ObjStm page
         # tree, indirect /Length, UTF-16BE/ToUnicode text, decoy object —
         # same spans, so the extracted-text goldens are unchanged by
@@ -244,7 +235,7 @@ def _pdf_doc(rng: random.Random) -> bytes:
         )
 
         return make_pdf_bytes_modern(spans, width=width)
-    if 0.59 <= roll < 0.60 and _compat_version() >= 10:
+    if 0.59 <= roll < 0.60:
         # v10: a Form-XObject span (identity /Matrix, Do) plus a BI/ID/EI
         # inline-image decoy whose binary payload contains unbalanced
         # parens and a fake Tj — extraction is invariant by construction
@@ -255,7 +246,7 @@ def _pdf_doc(rng: random.Random) -> bytes:
         return make_pdf_bytes(
             spans, width=width, use_form=True, inline_image=True
         )
-    if 0.58 <= roll < 0.59 and _compat_version() >= 9:
+    if 0.58 <= roll < 0.59:
         # v9: Type0/Identity-H WITHOUT /ToUnicode — the font decodes
         # through the predefined-CMap path (pdf_real._page_fonts, r6);
         # identity decode equals the CMap's identity bfrange, so the
@@ -265,7 +256,7 @@ def _pdf_doc(rng: random.Random) -> bytes:
         )
 
         return make_pdf_bytes_modern(spans, width=width, tounicode=False)
-    if 0.56 <= roll < 0.58 and _compat_version() >= 8:
+    if 0.56 <= roll < 0.58:
         # v8: simple-font /Encoding dialects (the most common real-PDF
         # family) and PDF 2.0 AES-256 — span text gains WinAnsi-reachable
         # non-ASCII so the encoding tables do real work; goldens follow
@@ -291,7 +282,7 @@ def _pdf_doc(rng: random.Random) -> bytes:
             font_encoding="winansi",
             differences={0x7F: "uni2295"},
         )
-    if roll < 0.56 and _compat_version() >= 5:
+    if roll < 0.56:
         # non-Flate stream filters old distillers emitted (LZWDecode, the
         # chained ASCII85→Flate 7-bit-safe form) and the empty-password
         # RC4-encrypted form — same spans, goldens unchanged by
@@ -300,9 +291,9 @@ def _pdf_doc(rng: random.Random) -> bytes:
 
         if roll < 0.53:
             return make_pdf_bytes(spans, width=width, stream_filter="lzw")
-        if roll < 0.55 or _compat_version() < 6:
+        if roll < 0.55:
             return make_pdf_bytes(spans, width=width, stream_filter="a85+flate")
-        if roll < 0.555 or _compat_version() < 7:
+        if roll < 0.555:
             return make_pdf_bytes(
                 spans, width=width, stream_filter="flate", encrypt=True
             )
@@ -379,13 +370,13 @@ def make_documents(n_rows: int, start_id: int = 0) -> pd.DataFrame:
         elif kind < 0.07:
             html_bytes = b"\xff\xfe<html><body>truncated" + bytes([rng.randrange(256) | 0x80 for _ in range(16)])
             text = ""
-        elif kind < 0.10 and _compat_version() >= 11:
+        elif kind < 0.10:
             # v11: Markdown slice — routes to the third (text) branch
             title = _sentence(rng, lang, rng.randint(2, 6)).rstrip(".!?")
             doc = _markdown_doc(rng, lang, title)
             html_bytes = doc.encode("utf-8")
             text = " ".join(doc.split())
-        elif kind < 0.125 and _compat_version() >= 12:
+        elif kind < 0.125:
             # v12: declared-legacy-charset slice — WHATWG sniff path
             title = _sentence(rng, "en", rng.randint(2, 6)).rstrip(".!?")
             html_bytes, doc, lang = _charset_doc(rng, title)

@@ -1,19226 +1,44 @@
-"""AUTO-GENERATED by scripts/pin_oracle_goldens.py — DO NOT EDIT.
+"""Pinned golden outputs of the non-SQL-expressible queries as DuckDB oracles.
 
-Pinned golden outputs of the non-SQL-expressible queries at the
-two correctness scales (sf0.001 / sf0.01), keyed by the scale
-discriminator sum(length(text)) over documents. values_oracle()
-turns them into the literal VALUES SQL the DuckDB oracle runs —
-flipping these queries from rows-only to hash-exact in the driver
-gate (VERDICT r6 ask #1). Every pinned value is deterministic:
-doc_id-seeded pixels, pinned hash families, RNG-free k-means.
+The rows live in ``oracle_goldens.json.gz`` next to this module, written by
+``scripts/pin_oracle_goldens.py``: ``COLS`` (column name and DuckDB type per
+query), ``ORDER`` (each query's ORDER BY) and ``ROWS`` (the captured rows at
+the two correctness scales, sf0.001 / sf0.01, keyed by the scale
+discriminator ``sum(length(text))`` over documents). ``values_oracle()``
+turns them into the literal VALUES SQL the DuckDB oracle runs, so these
+queries are checked hash-exact like the SQL oracles. Every pinned value is
+deterministic: doc_id-seeded pixels, pinned hash families, RNG-free k-means.
+
+Only the driver reads the goldens; ``conf.package_zip()`` ships ``.py``
+files alone, so the data file never reaches executors.
 """
 
-# fmt: off
-COLS = {'q_png_resize': [('doc_id', 'BIGINT'), ('width', 'INTEGER'), ('height', 'INTEGER'), ('out_width', 'INTEGER'), ('out_height', 'INTEGER'), ('resized_sha', 'VARCHAR')], 'q_jpeg_progressive_resize': [('doc_id', 'BIGINT'), ('width', 'INTEGER'), ('height', 'INTEGER'), ('out_width', 'INTEGER'), ('out_height', 'INTEGER'), ('resized_sha', 'VARCHAR')], 'q_video_frame_sample': [('doc_id', 'BIGINT'), ('frame_idx', 'INTEGER'), ('n_frames', 'INTEGER'), ('width', 'INTEGER'), ('height', 'INTEGER'), ('frame_sha', 'VARCHAR')], 'q_video_mp4_frames': [('doc_id', 'BIGINT'), ('frame_idx', 'INTEGER'), ('n_frames', 'INTEGER'), ('width', 'INTEGER'), ('height', 'INTEGER'), ('frame_sha', 'VARCHAR')], 'q_gif_anim_frames': [('doc_id', 'BIGINT'), ('frame_idx', 'INTEGER'), ('n_frames', 'INTEGER'), ('width', 'INTEGER'), ('height', 'INTEGER'), ('frame_sha', 'VARCHAR')], 'q_pdf_images': [('doc_id', 'BIGINT'), ('page', 'INTEGER'), ('name', 'VARCHAR'), ('width', 'INTEGER'), ('height', 'INTEGER'), ('colorspace', 'VARCHAR'), ('bpc', 'INTEGER'), ('filter', 'VARCHAR'), ('status', 'VARCHAR'), ('pixel_sha', 'VARCHAR')], 'q_favicon': [('doc_id', 'BIGINT'), ('idx', 'INTEGER'), ('fmt', 'VARCHAR'), ('width', 'INTEGER'), ('height', 'INTEGER'), ('pixel_sha', 'VARCHAR')], 'q_grounding_boxes': [('doc_id', 'BIGINT'), ('n_boxes', 'INTEGER'), ('artifact_sha', 'VARCHAR')], 'q_extract_html_pipeline': [('url', 'VARCHAR'), ('branch', 'VARCHAR'), ('extracted_text', 'VARCHAR'), ('n_chars', 'BIGINT'), ('n_blocks_total', 'BIGINT'), ('n_blocks_accepted', 'BIGINT')], 'q_minhash_lsh_fast': [('id_a', 'BIGINT'), ('id_b', 'BIGINT')], 'q_simhash_fast': [('doc_id', 'BIGINT'), ('simhash', 'BIGINT')], 'q_neardup_lsh': [('id_a', 'BIGINT'), ('id_b', 'BIGINT'), ('cosine', 'DOUBLE')], 'q_ann_ivf': [('vec_id', 'BIGINT'), ('cosine', 'DOUBLE')], 'q_ann_pq': [('vec_id', 'BIGINT'), ('cosine', 'DOUBLE')], 'q_semdedup': [('vec_id', 'BIGINT'), ('centroid', 'INTEGER'), ('component', 'BIGINT'), ('cos_centroid', 'DOUBLE'), ('keep', 'INTEGER')]}
+from __future__ import annotations
 
-ORDER = {'q_png_resize': 'doc_id', 'q_jpeg_progressive_resize': 'doc_id', 'q_video_frame_sample': 'doc_id, frame_idx', 'q_video_mp4_frames': 'doc_id, frame_idx', 'q_gif_anim_frames': 'doc_id, frame_idx', 'q_pdf_images': 'doc_id, page, name', 'q_favicon': 'doc_id, idx', 'q_grounding_boxes': 'doc_id', 'q_extract_html_pipeline': 'url', 'q_minhash_lsh_fast': 'id_a, id_b', 'q_simhash_fast': 'doc_id', 'q_neardup_lsh': 'id_a, id_b', 'q_ann_ivf': 'cosine DESC, vec_id', 'q_ann_pq': 'cosine DESC, vec_id', 'q_semdedup': 'vec_id'}
+import functools
+import gzip
+import json
+import os
 
-ROWS = {
-  'q_png_resize': {
-    153156: [
-      (0, 8, 8, 8, 8, '4c5faf1b141afbede78a51c5ee67252d62edba5b4491860ad040a2e20f9c1f7f'),
-      (1, 9, 9, 9, 9, '307e71e8c7c2bd7737bceda3351d05636a96304aca1d0c738da3ca2c2475c7e7'),
-      (2, 10, 10, 10, 10, 'ae79ac4b797bcc0c24d5bb6f639e927dc6a54b81fd6823415b817a7e1d88cf16'),
-      (3, 11, 11, 11, 11, '3d9e6dd02444cd112a7927e7f8373d6075f98e485eb91d8831b448aebf780217'),
-      (4, 12, 12, 12, 12, 'cc0a1e21e74f41b7a9cdba46291f18f88419572a3080ee93dc80e36cc1e4334c'),
-      (5, 13, 13, 13, 13, 'c983e83b4e3695ca8e0a6ef54b159806a634de282aaf34ba3a0af22ea4ac5a6d'),
-      (6, 14, 14, 14, 14, '4a86c266919fe052237e211e44458e1d5505905326b692e236f96bb12d10feb9'),
-      (7, 15, 15, 15, 15, '8c403609ab373ff293dc8f6437a46ed929c5850bab1e71ae8f86d6bc3255821f'),
-      (8, 16, 16, 16, 16, 'ca33b2ac96603d5793b2b6cc92a3aa12193fb516b4f0fa516ae73484af29d5dd'),
-      (9, 17, 17, 17, 17, 'b18a36179e7f4450329df3a49f824dae2e8bc917942602fabfb17dcce64f8630'),
-      (10, 18, 18, 18, 18, '45bb51fdef67dcf0a4d8571956cb8300cc6ad05c1352159f876326868c939aaa'),
-      (11, 19, 19, 19, 19, '9965fce3d9e9fbbe97400d4587f8f9f9ed534df12c974cbfa77a1d8fbb2779a8'),
-      (12, 20, 20, 20, 20, '14e0fa38dccdf12c45faa0f52e3b869e5273d7c84974922e5796c5d100fa6630'),
-      (13, 21, 21, 21, 21, '4e45ad9768cb4903bf2b7393cf7d6d40767e65d20dad652c4c79eea7bbdff00e'),
-      (14, 22, 22, 22, 22, '9fbbf2e8f056c5f16e04de7fe0efbc24fbe085a4697498dea22dc22cba33a917'),
-      (15, 23, 23, 23, 23, 'e5e64ab70946a3092438624b2518ed042fb98fe27cce9437a393f71ea4302513'),
-      (16, 24, 24, 24, 24, '48191cfad05a2f5f3903e52d65b4c6535450843822645255f8da82efe71712f7'),
-      (17, 25, 25, 25, 25, 'a4b2008b20d5677858286a91efeaf8f97f5576e8192882832192402011788acf'),
-      (18, 26, 26, 26, 26, '9bafbaf02abf48425518c257a57ab584484bef7ffd126a0146ecf743daa8bbd1'),
-      (19, 27, 27, 27, 27, 'ebbf917dee82b5059260e7f9401141d3b9e4055b018762c843d33bf1c37fe032'),
-      (20, 28, 28, 28, 28, '29caeca067358e194169c074dc4a4a2b5bc40a70f329d6c62d3908e1be975389'),
-      (21, 29, 29, 29, 29, '01b0b5e1148898d9776647ae4e1a4d0bd122a06372636380746fb477acbf4f0b'),
-      (22, 30, 30, 30, 30, '8142a17f5cd4f661f8b66ef11d39bfe4a59c05c69663d65afe1ff086a34e8adc'),
-      (23, 31, 31, 31, 31, '976ee2340e51efa06baccff5bf4fdb7d639c91d3104a2ab46bd9760ed696b93d'),
-      (24, 32, 32, 32, 32, '005085850395e6be8f80005aef67fc9e2cf969275423cc2d0c6d0141b62c1ac1'),
-      (25, 33, 33, 32, 32, 'cdac051bf3367f77e8005ab6abf4810838da3bafc66ea8dd1c04c511b0ac31c5'),
-      (26, 34, 34, 32, 32, 'de2c731a24f59929ee27232ecd271db6734fb8a1f1a24397b04ee9fb2bc9bf05'),
-      (27, 35, 35, 32, 32, 'ef86eadc25875dae01f21ec4a719205f0e0abd2bbc4eee0b0fda75efce68b999'),
-      (28, 36, 36, 32, 32, '9205fde459857e3699207f59dd43b25d0f7ff2e8c9a197decc239210b30d654f'),
-      (29, 37, 37, 32, 32, '362b209568263fada8209531c276865ca6d6e4e893f691d392d18748de26a766'),
-      (30, 38, 38, 32, 32, '5c21808b5620442f531ddc4aab5886a92819338b3902503199f4813c6beacd32'),
-      (31, 39, 39, 32, 32, '8dee87f8042213fd74aadb6ec9de05da7ce17b68e873020095cf2fa7c07e2ab8'),
-      (32, 40, 40, 32, 32, '1b442cf7235114cae5e11b7716fb27633dc4dc499c000d2e2bee3faedbaf5457'),
-      (33, 41, 41, 32, 32, 'd4b753dc736884d65d67fc86526aedc340540fa93409a7cb90a7a1d337f9a638'),
-      (34, 42, 42, 32, 32, '5b24cde4fa2ff494291fe9f1cadbae5f4b02305720aba33ddef56356275d7e0b'),
-      (35, 43, 43, 32, 32, 'f639615085fb1639651e2a37a59f956e35c0b1e9748032d3b8373bf1cfcb387b'),
-      (36, 44, 44, 32, 32, 'eedb1794482de4357cb0a1c56af3b6bf5051a304e36a0b0e64f70ed16d84a019'),
-      (37, 45, 45, 32, 32, '461e42a072dad1364ce6ccc8c626965ce03f46c0146fd1c627680c834f0e9378'),
-      (38, 46, 46, 32, 32, '21620930c0673a721a8b2d9ed1737e6484cc45201d35b91e4ccdee5f4e18d6f3'),
-      (39, 47, 47, 32, 32, 'c5718e3164e121ead72f2c45a2e12f21647f5cdcef805ae270567616c81c493f'),
-      (40, 48, 48, 32, 32, '3f61c46301c353c2ddd5335badd278a656224da4b11192eeeb050c088a7901af'),
-      (41, 49, 49, 32, 32, '923e5f2b926da86059481285ae9e2d9021214a41ecfafb8c9258776cb37c677f'),
-      (42, 50, 50, 32, 32, 'd12ab6b81470dc1efdd3a819c8f0985c1af8a6173eb4425a63aa89f923176c11'),
-      (43, 51, 51, 32, 32, '240367bb74d4e10c67ca3e898bbee02c99c9cfb32269521d81e77785ae21c5dd'),
-      (44, 52, 52, 32, 32, 'abfd2a1390278001ea8a5604ad7373c6134068c1c68df407ca3267c0116a6954'),
-      (45, 53, 53, 32, 32, 'ec8fe06ef5e2b6416e4ff1cacfba07554012dfc3fb0f4f17c408f339dd5e630e'),
-      (46, 54, 54, 32, 32, 'c7f0abfc4b89a79f893a124964f0130da023d8699030a96fddd0e7cfd8d77203'),
-      (47, 55, 55, 32, 32, 'd911fdebc62e5091ecb81f1899b93e287ce1267d77e299eb454c6325d60c22f1'),
-      (48, 56, 8, 32, 5, '368972d2eaf2df4e8b54851abade1a27d93c35dc502c6177f1a4cf0b15032d13'),
-      (49, 57, 9, 32, 5, '2756a0d45a655aa08fa00fcf6853facf9c9e42d0599c75ad9b68beb1c0ecc9d3'),
-      (50, 58, 10, 32, 6, 'd3bc66af139d787d97ed5166be90d7cb3bdd180d710e88c1da5ec064c02bf1cb'),
-      (51, 59, 11, 32, 6, '9090a95a02643dd8e6966cfc1e66bcdc68c20b5ce343ed003f3203c1fa1b1828'),
-      (52, 60, 12, 32, 6, 'f131640318072c2304da9f2cb511413cc0fa30e0439be9a0f6689e722e5618e1'),
-      (53, 61, 13, 32, 7, '5e852713e3bcc4621d1ee8fa1746438bfc0984cdd08109f98aa6eb83bec0dcc8'),
-      (54, 62, 14, 32, 7, 'fc1b51fdeb1a4e9e6c913c6ccce349da0ad67db69fdc4ee9131a02a52c5a1fc3'),
-      (55, 63, 15, 32, 8, 'b75094c617b30000aa2bd3cc3715a318f7503cc6ddcc3c1ccd6441227f6b5b23'),
-      (56, 64, 16, 32, 8, 'd4a594c4750db5e36becc23434a92e31e6e97a7f8452fca67358d05e938b8cf4'),
-      (57, 65, 17, 32, 8, 'd8434345afaf50f45fbe897a9ec6df3e41196d088b7666c6ffdf1be607576a0b'),
-      (58, 66, 18, 32, 9, '88c5ffc1f51b75a1d50b5a50b9665cbbc44ae031fa47a1467aa0535789c77a9d'),
-      (59, 67, 19, 32, 9, 'a5fd869241a371a5a3f7ce0019ac88719fddf559552d1869d19992dc2bcff042'),
-      (60, 68, 20, 32, 9, '2bc30403ac6e912a14d6e2459b01be1ca946b6133ff8a4e0f7e60b84e9f11aed'),
-      (61, 69, 21, 32, 10, 'b63d67fbacd907c9ac03d70223dbda4125971e7b55c6babf1e7424ba7e79faa0'),
-      (62, 70, 22, 32, 10, 'd7efa5bd7eaf55901a42e4b195000a1e287e103d4a9447534cf1c0c6a938f8cf'),
-      (63, 71, 23, 32, 10, '483c410cc18a0ff02017c7ef9b013911e61bf4d66648ec774f3e5edc9428e07d'),
-      (64, 8, 24, 8, 24, 'd8194f138c61d37a5ef3e92fcb954fdf284a0efb9ca23c079f3de21abefb59dd'),
-      (65, 9, 25, 9, 25, 'b27e4d43694beeafa441f12d29b749e09c7257932dc7cab651256c70cd8d670b'),
-      (66, 10, 26, 10, 26, '0833e4f95f91ea2341e5cabe9e97bcd2f4aa540c79a312e1aff3172c1e021baa'),
-      (67, 11, 27, 11, 27, '668e75777aa531eeb5c6decc61bbb5fe3bce9313c83476f1fbf21ea20c5d0d8c'),
-      (68, 12, 28, 12, 28, 'cde57d8c668b311b0ba9dac1140d8614cf1a47505066852c69d875560c2aa805'),
-      (69, 13, 29, 13, 29, '5472b269b881e71fdff94b8b81d832d76b6aba1f65bbfadce6af3e0b20cd5ef8'),
-      (70, 14, 30, 14, 30, '8cb8d52cc1e7847c28c59f461f1f255a34593ba9ef3e71ce1249ee36f77b2df4'),
-      (71, 15, 31, 15, 31, 'a34681d86e1daa563e529f3100699ee4b8e44db291bd1b20c13ba39fbedbaa17'),
-      (72, 16, 32, 16, 32, '3c6ad4ee6addca1d03be04f72860f32f0b0d5ff7296ccb53ebf1654b8bcd6635'),
-      (73, 17, 33, 16, 32, '40bd53ba22462266b166a26cbcfba6b5e5632e5ca7cd30524af1b8127cfcdeec'),
-      (74, 18, 34, 17, 32, '0d6a71ad34f3380cd3d295942ed6c3f08989873d13bbd98fea25067189f3811d'),
-      (75, 19, 35, 17, 32, '36795547acbb509e33888546fd49e0ef7741a638aac8e38a83d36e2bb0b6397d'),
-      (76, 20, 36, 18, 32, '13958f067648d54bd3a9a2091f15093481653cd7e996bbbfabd3f566bc081cbc'),
-      (77, 21, 37, 18, 32, 'fa1d49fe186c0dc4e3c3f11c50d7af6c5555ecb6fd03dab9f26d64522a10a0ab'),
-      (78, 22, 38, 19, 32, 'da81848dd1fdb36022eea12f7636214498369f4b2cd6e142fc407edd8842473b'),
-      (79, 23, 39, 19, 32, 'aa9292510807e729bf59bf7bf3f23046c832bfcfa9952c32807e5c0b1b04fbcc'),
-      (80, 24, 40, 19, 32, 'd47b300aceef351cba3ee2f7378b30c0c6248e582e5703c845016459ce51fdcb'),
-      (81, 25, 41, 20, 32, 'ce02eb54039ad9a5156939189c0028aa91953d80b3827bc7cc396f279c5d96df'),
-      (82, 26, 42, 20, 32, '8f54e18ba6f3ee2b049f3aba18f86f589d2f6020a07cb9a081efa7eb9fa7cb68'),
-      (83, 27, 43, 20, 32, '7f61c50b66af43522bcafdcaf104dda4110a602986635447000b16a8ef58e8db'),
-      (84, 28, 44, 20, 32, 'b677163f5c9b59ee50c3ce44e67673a1a88b55334db759bbad4320218930a841'),
-      (85, 29, 45, 21, 32, '4386c599f0918cc65b1f13c1daec50b0696bec323c398e7c34df1e2246ccfba1'),
-      (86, 30, 46, 21, 32, '397605b74fdf0363803a9deab429b7081a86702f64cdbe38ac09c6db20a0c902'),
-      (87, 31, 47, 21, 32, '7d56bcb8585ef647b420a74067b16a83330209658e74070ab1ce3255281d99a3'),
-      (88, 32, 48, 21, 32, '10ea19b58f1586d90c1c15bb8d689d54c3f12eb73b92956e6f21d356af96f62f'),
-      (89, 33, 49, 22, 32, 'f11170d408ff51d3fd3397ec27ecf57d5c3efd48acbe2ffb030ee10ccae7ecc2'),
-      (90, 34, 50, 22, 32, '3a3d7d2f777bd442888ce20d787292ccb068ecde4392599b01a3b02c699ea6dd'),
-      (91, 35, 51, 22, 32, 'd11e2009c0389871302eebb1b7c778b2fcdbb35a5c84df2614118a5743b9e5e3'),
-      (92, 36, 52, 22, 32, '05b2c1948968c54eb0532a9061449ec8559eb8ce17d9eda60b229ed993076dc2'),
-      (93, 37, 53, 22, 32, 'db83b0c76ddac6ef858d7c30f087db848a28062b43fc58f5351999f7c20a4f4f'),
-      (94, 38, 54, 23, 32, '2bb2c9dbcb20cf98a5f42944a66019150176cf3533b107316318da1ef89b331d'),
-      (95, 39, 55, 23, 32, 'f707aef11292f11ffacd317f1169979ab4cc102f8ab091be2278a3571780b78e'),
-      (96, 40, 8, 32, 6, '7a1870a606f9f5d8efb6d60656cbcfeb9dfcd85c0e0edcc3b26bdc1609ec966b'),
-      (97, 41, 9, 32, 7, '96a47f14e19235165654310696af60246d4bc5d386df136ea786234d012b3543'),
-      (98, 42, 10, 32, 8, 'e20f935df9ca01714e35b3e69b9ec344975ff6c1b652294132e115aa686c3266'),
-      (99, 43, 11, 32, 8, 'f53fd2b4de7862b135c2df853e3c0e4a079772f4f8f9638be7a5659ffb6dd478'),
-      (100, 44, 12, 32, 9, '2c3e95215c6083f2968d7efeab4d8c3d2b051fb61591090b4b895ab4a23ef306'),
-      (101, 45, 13, 32, 9, '59ba8e466332dfb362e339885d60fa45570cfb93a762272d40898b04b47c744f'),
-      (102, 46, 14, 32, 10, '82cafe8c3ba93dd668a9dbadaca94d2e2cceb4c34abe29c123aa77a2d427366c'),
-      (103, 47, 15, 32, 10, 'c703a5056e62b99d101ff0e24866a810bbc25066b056ff35f51a55f95ad6adb2'),
-      (104, 48, 16, 32, 11, 'b14beb365661733ae38629db0d8d824745087b79886bfa5b70b12dc6fa8f96c1'),
-      (105, 49, 17, 32, 11, 'd613e1a14df09a14852bae4f1ee30e03ea9afd707c0627fc85ff3d1c55411d77'),
-      (106, 50, 18, 32, 12, 'b27861ee33c4685f0cb1001e54dc443bbdff44dd965c57da8a10f00340fcd272'),
-      (107, 51, 19, 32, 12, '6f3a5682aec302eb1c93c1fcd7277b075a2f7ea0d367e8db84748c7c59615971'),
-      (108, 52, 20, 32, 12, '948b28558a7455a4b309e8908b86d078088c3c8e5e8318cabcb595a7bcad2477'),
-      (109, 53, 21, 32, 13, '8da3668a3e27792dafd40e47c428b934f682a21204c8cb1237da51af06d068af'),
-      (110, 54, 22, 32, 13, '2758c8fd2d7fc5924ac23ccd57425f8775c50b22be93ed1414c8b80fc36b2258'),
-      (111, 55, 23, 32, 13, 'd430e67f0b94465b9874821d7a0aaa03da4e549af6f6f4654676d494327787e2'),
-      (112, 56, 24, 32, 14, 'ebcd8fabd5acfae22c77cde4a1d79fe9b5014e38248157dee43eb56041245d03'),
-      (113, 57, 25, 32, 14, 'ae7be28f7232548caff72ea25ac147993c5f179e8ec024cc19ebcd01bbefbc70'),
-      (114, 58, 26, 32, 14, '18a38ed014413bb6f41de18296f3faff205ed700ef78124cbfe306e3e168169e'),
-      (115, 59, 27, 32, 15, '5c99f8aa4b31cac6b9f4713d74c06321b4ee3fb4e4d9ce37240c2f394a990744'),
-      (116, 60, 28, 32, 15, 'ede7926146859c3e1eaa215cb2f4dc1280407c0c3450650b6748041c6ff6ffb6'),
-      (117, 61, 29, 32, 15, '6dd9d56797e536c8a2ba9852460fd9f1e90aad7ef6f34f91b9f20c0b9a4e44f2'),
-      (118, 62, 30, 32, 15, 'ffdbfe87910dfebc4d4569c755666967a082217feaab5d33d2493e5f17ecaa50'),
-      (119, 63, 31, 32, 16, 'a178e37bc656e85f55ed28f4776353f89c8c3a927c3a3a486b9fb4b9ec337de1'),
-      (120, 64, 32, 32, 16, '9747aa8476a6ae1caf7fbfc4eb517442b906cfd58a9578c2bef98d1bf31f6844'),
-      (121, 65, 33, 32, 16, '91ce86334ce890c6eee404379f8328d7483125195645e3d40aa3dce04cf76855'),
-      (122, 66, 34, 32, 16, 'b05d3e0728b6240312bf8de674b9d063f72afc1d9a45db5f6b3b837d407c1faa'),
-      (123, 67, 35, 32, 17, '4a965af2a5faea19c3b4dc22ac00b5992c81883895aa5b9d3b6b5225d5f3605d'),
-      (124, 68, 36, 32, 17, '866d152779a8da368b14c007b4f74fc1ea9423dca6adafeef4c7ceb152bca3b0'),
-      (125, 69, 37, 32, 17, '84e126924774062251e6bceec29bf4af782c125cd4f9b020e208d190d6b0e20f'),
-      (126, 70, 38, 32, 17, '5207d350ff08c65378b1f6c4772ff438a1f4639fd0f0ea5da177369ee1ba2d1b'),
-      (127, 71, 39, 32, 18, '781be742bc73c0ec487b2e6deee2e114615d23d460deb15a9acec0c81e096e59'),
-      (128, 8, 40, 6, 32, '71376e498d757bfc02f472c7ae705f5a4a9633b526b38e960c818c2fbfb7e188'),
-      (129, 9, 41, 7, 32, '77d0534dca2b3efcabb300730592f928a7cab4ac2ceaa64344bf7ad42cec8012'),
-      (130, 10, 42, 8, 32, 'b4c1f04dae64f6d3ffa2149a30b3905f0da21e8cad28949ffe3b61642f03559c'),
-      (131, 11, 43, 8, 32, '1ded3b2d3eea1484155bddd702818ce5c59d3103db3c3bdc090d3c0676f5a02e'),
-      (132, 12, 44, 9, 32, '4a033f086b2300750c09a4a6f75462315a91d3b3fe4c53ca4606c6149f76cd38'),
-      (133, 13, 45, 9, 32, '228384ff7337ebff705c07149698053e04f3d9e52c5eef20f7ecb668399c76d2'),
-      (134, 14, 46, 10, 32, '90d757cf57c907bb8deb688c4bc789f90c77807df919d989be05d8f33a2b3a8a'),
-      (135, 15, 47, 10, 32, 'be359d4ab1fdec5f078e87278fb8667454574e49d8343ce58d6da654c7b9d248'),
-      (136, 16, 48, 11, 32, '18190e127090de893fff1c388a159caf2d3b7d98fb811417d475f7cf22a47f46'),
-      (137, 17, 49, 11, 32, '9be4b6ac619d3f73e4bd53c99e40e9dac0c00022ab555d7f77ad3848f10811ac'),
-      (138, 18, 50, 12, 32, '26b7365c44b459065868bd7a4e5f0f95628a9e78d3e862e4b01bebea03638e4f'),
-      (139, 19, 51, 12, 32, 'ce552a7fc86d2f8992844712a25305d8fd69bfd2e020ebd8c319035e8828a4fb'),
-      (140, 20, 52, 12, 32, '0b37583dbb740604b9dc6000eddb9ca465d1e925b5e18ea94e10381d3b6c185f'),
-      (141, 21, 53, 13, 32, 'e3dbd218da8a4d77e590410619068a9b96ab8ef58a1ffdca68a0c18ab3815d96'),
-      (142, 22, 54, 13, 32, '4a3444bbeb990bad1d4c6695cedad4937890b30fe436b391a93fa2e3d861cf42'),
-      (143, 23, 55, 13, 32, 'cde7f89c53f3a625d4d9cdaf604fa22040b8d60cd70c3b94c6f07f5b9f7e5b4f'),
-      (144, 24, 8, 24, 8, 'a110c8c41662ddf0eb9b1845b9fcc7086adc9ff74d5e4ec961d922f09ed7b172'),
-      (145, 25, 9, 25, 9, '0b7fad454cad4eda5942404dbe091196f9c2536e0b892a0cae306320d0f6182f'),
-      (146, 26, 10, 26, 10, '86c155e480a27cc600bcb86d24954504527f69fbc0c10ec66b9480a907ccb3f1'),
-      (147, 27, 11, 27, 11, '4f9a2b7fc751b69d89e6945ffde97f8009f4f16b826200e47fdf95186a9cc90f'),
-      (148, 28, 12, 28, 12, 'a8697684299ab48b64fce7dfeb53774442fcc8512e2a332d744780efc14a1cc9'),
-      (149, 29, 13, 29, 13, 'b373ee0617f28c7b751c27c39cc89b1e18e6ac4719928c3dfed23ab0c8736a2f'),
-      (150, 30, 14, 30, 14, '3d0a86768353b5106ae08e7efd23ea7443af1f2af89ec4460f03b0aec5014c04'),
-      (151, 31, 15, 31, 15, '7b3435a75cb0711872c57d49bf230a04ab0dea68c3c711c7a782df34045efd96'),
-      (152, 32, 16, 32, 16, '31720948eb06ff49503f64c054a08732afe2a5cc0790e54e20227ef5ec35c5d8'),
-      (153, 33, 17, 32, 16, '3800567c7052773c7356696584a8bebc2cb8455ae1d5d318fbf5b5db28c684a5'),
-      (154, 34, 18, 32, 17, '3e34f47fc85c80a84533713f6a7787bee905916dadd5ac5a9c720b31bb607ce1'),
-      (155, 35, 19, 32, 17, '7f0015cbcdebac8f8f0edb41a12eaa50b606bdb8d7c8a1eb48a138c75aee4c91'),
-      (156, 36, 20, 32, 18, '42a851f50d3439944ed8520701069f214222c0776be87db4c4ccdf3d508e7421'),
-      (157, 37, 21, 32, 18, '3fec8b89a81e1aebddc8b069bfc1a80aedd1330ec1b6dbe2bc39bd0a82aeef1a'),
-      (158, 38, 22, 32, 19, 'c63e4de968c807eca41434562c530393dd6c5fcba24b9b0b5755b7230c7ee2d7'),
-      (159, 39, 23, 32, 19, '2f6afd5277a473c458a95320ce165d4002f52efabe7235c389c39c2acfda9a96'),
-      (160, 40, 24, 32, 19, '931c88b87255cf1372b87f88d90d653fe2afa45252698e35e36d82791260426c'),
-      (161, 41, 25, 32, 20, '6171b7c29619f4aeee0e7ac3f912f02fb24407dc1b5658a37c022bdbffa3c9c0'),
-      (162, 42, 26, 32, 20, '41bb2f09b1735af869bbfad6d544bea81dce481d03242285b0581937d1eca6fa'),
-      (163, 43, 27, 32, 20, 'b99bf860d474a2fea5e695de1f22d5abb59735e9ec5c504f5c0331e44cce18df'),
-      (164, 44, 28, 32, 20, 'aacfadcdb1f517c875741c9ad1ca63c8f51d58ebe1c937c4826d496dada392ac'),
-      (165, 45, 29, 32, 21, '48ff17c5a0af8c398596658e1db9b4fee00bb8742155933dce5f7eb6af7845e3'),
-      (166, 46, 30, 32, 21, 'e758d4a795c010dca14b186f4efc70dce4c52a8713647bdfba9ba0fc0617f6bb'),
-      (167, 47, 31, 32, 21, '8ae56f493bbe612f42bfcbc4709f1e181dbfb947066f0bef4c3b8c922d716405'),
-      (168, 48, 32, 32, 21, '53b1a1cf06b51004e76fe74a066c2646c7ab5f9943e1e06680a63dd840f48cd2'),
-      (169, 49, 33, 32, 22, 'bf45906d0ef996b9e1851ec585cf858c20e825a262369f42198c8cc6898ccf5e'),
-      (170, 50, 34, 32, 22, 'e06ddc00baf556e08144d65800c7e2e251a4b7ddcebd9813148c87b4af3d40ed'),
-      (171, 51, 35, 32, 22, '25cdaae5edb2346087b62579c00c60434e0a9568ba5fbbf41a2dfa7a3f69a8c0'),
-      (172, 52, 36, 32, 22, 'c3bdf58d37ca4a9f4b03820c104f1d27645dbf2c2b1218a13f8c1a7e4dc0e1c9'),
-      (173, 53, 37, 32, 22, '0576235577eea42e34aa1b4eb78f5e6717c4b0298eb64100abd3131da68362c1'),
-      (174, 54, 38, 32, 23, 'f2ae4cbfe2719d7e47d562dfe0ca1aa14e4154e2af57d97f9565ec99e4a5faac'),
-      (175, 55, 39, 32, 23, 'f7faa23504086635deec3eb55619963f628b8b4dec8eb9ab216af9d35cfc50da'),
-      (176, 56, 40, 32, 23, 'd653b17a2571b831bb45bd6a0c77eabf7fc8c17aa802c778a0b1a33dcf0e560a'),
-      (177, 57, 41, 32, 23, '90936f62beb5c9436d39cdb1d07a388556f19fd384af79ae61aeb74d9d067858'),
-      (178, 58, 42, 32, 23, '189c22109b1a6d47265a7e16469007627fccf1b357e4d4b2a86c385aff45b070'),
-      (179, 59, 43, 32, 23, '05d24fdee1150277c182fd7227cad2ee3824f63f7870dd76a358e9e33dd7144f'),
-      (180, 60, 44, 32, 23, 'dcbde48fac0198ba30ab0eccc312d8bb6919f195c1f66cdc7269a95c2cca848e'),
-      (181, 61, 45, 32, 24, '4add5c9cb26b29f2bdd643d850315167b2208bb12f1373ce12aadf58d2171d2f'),
-      (182, 62, 46, 32, 24, '6c5b21d0d0cc4367763a38bff62185eaa55a29e4aab212deb67c27b010dcc3ab'),
-      (183, 63, 47, 32, 24, '358e608cac5676e0c2e93b4771c6b4463554d833b5f51f782bafb078264d7600'),
-      (184, 64, 48, 32, 24, '3e99a6bce4ed8e87e99b38089d02b1e995e545336f3c5e5dac51ba409d15b810'),
-      (185, 65, 49, 32, 24, '16bb62e6cdfc0157a27a0a88848c90f69b6a2559078b25ffe0cd90bb3a18b85c'),
-      (186, 66, 50, 32, 24, 'bfd59b8e0b0050711551f23d1ed4a5e0f0990ce3f71537b4c55f4ad87a5d10d7'),
-      (187, 67, 51, 32, 24, '190a9ad55f164609faa47145a25cdd860d2f374868f838a7cb36f6f5d05d1061'),
-      (188, 68, 52, 32, 24, 'b8b260c53efbec02cbb387472378700b8b7dcbe18788f89806fce7a1f7042199'),
-      (189, 69, 53, 32, 25, '584103e996e62d073b74b35d67d015d7dbf81192891e556d224140ba82b8d5a3'),
-      (190, 70, 54, 32, 25, 'e0ad6b34c73de607c56e3cd146608289fd24fdf72190cd0cca9685495028dbdd'),
-      (191, 71, 55, 32, 25, '603ed8d3ba7233910e70534dc75f309b4ddb0bf04b418c2f7597ac26c9fd2c28'),
-      (192, 8, 8, 8, 8, '8366c0de900d98cdf8cd7d0a488af68298065af86a4cab1a221bdf4826a175e0'),
-      (193, 9, 9, 9, 9, '224ae691a4f4927fb0a07f97bcbcff01e43d62bad09ad62e6f8963e1cb53058d'),
-      (194, 10, 10, 10, 10, 'bfefd0dac3573ac98d03705b3561554b540de716643379e8e131ca3756d6f956'),
-      (195, 11, 11, 11, 11, 'c3ff2d819eecac4fd0737cd7dd417931675a12a0c665f04bbf5d99166d06d288'),
-      (196, 12, 12, 12, 12, 'f095ceaa3f6058c010c6d6a1f9a684bb879e064beecbb77c0e96db950919b816'),
-      (197, 13, 13, 13, 13, '88b2e8b6635a571c35c59eea8c4f91cf04c0198436a74f55aa61de9152e840c1'),
-      (198, 14, 14, 14, 14, '0f33e261f7098c3edfafaefcbdfbcb7effc9ca561bc2d2531a0467c4fb60351a'),
-      (199, 15, 15, 15, 15, 'efde6c76183e1b8cd5590ca2f6cd5ecca52cc7d450fe418ab9b2c249dbe27c8d'),
-      (200, 16, 16, 16, 16, 'a77eec02c52ec66f0bed7602929d4434bc3b73567a4347702b5ad2abfe03ee1b'),
-      (201, 17, 17, 17, 17, 'ea6ff45fbf9019de97fa594a250516e9d5b1a24f2993b4829e7145b367ebb871'),
-      (202, 18, 18, 18, 18, '6cc11974bc9da4ace790afad71db5653197fa08cc6adac8d6aa70fbfbc0a0868'),
-      (203, 19, 19, 19, 19, '3c3a2921629eaa7e951cfea66c5af6d68a7d203fc2a005a4ac472041a80fbae5'),
-      (204, 20, 20, 20, 20, 'bc450458d5e0ee9a67c954ef470fc24e00572c0a5c46cde5d2659b0c18ed9451'),
-      (205, 21, 21, 21, 21, '56bc261864bfd6d5eb434d0f59ade45da54eb5482c98f9e7dba17a539d568603'),
-      (206, 22, 22, 22, 22, '420ffc7d8dadd019f33f6307bfa4cec0538350f2437bfc96a11f3d5555217acd'),
-      (207, 23, 23, 23, 23, 'a717c2227102b267098c457c0c4a2a4b62934eeaa0a3335682454da92975c15c'),
-      (208, 24, 24, 24, 24, '697f9ed14e904a03beb9285db4ba32ba0aacf522cac3e35ffc4d80667641baf5'),
-      (209, 25, 25, 25, 25, 'b8ed790461eb42e8289f781ff26832efb827e504de2c84bf7dd054b442da88d5'),
-      (210, 26, 26, 26, 26, '16a0664ec48302d2e9745f732dedab62ef8a8237213d48a20bf1f17cc2ba27fc'),
-      (211, 27, 27, 27, 27, '153ca7f4e965b817c03c0471a271efb9eae05b29a04503c5cdac7797f1dd35cf'),
-      (212, 28, 28, 28, 28, '8d4ae5b239d3d4f3162fb618cd1e7879b79b5624fe5142a98626286a20aecdff'),
-      (213, 29, 29, 29, 29, '2e9860aabc1ed87fea65512fffeb01c7c36cd158bde65a8f2293ef629972b3a5'),
-      (214, 30, 30, 30, 30, 'b5de456010eb4950c1c3cfb0ee36625669a0531a534b237a5aaf9cd3749db6b5'),
-      (215, 31, 31, 31, 31, 'f15a7ce0f622861f399d5b01376ae30a17e471c7bab30457561a756608d31c9a'),
-      (216, 32, 32, 32, 32, 'c98c12d46ce57e18282aa5ab7611f8e9bc4918bbc734021a3cb46acda2f0325a'),
-      (217, 33, 33, 32, 32, '99edc27b973d6058080bc74cfe8c2c27981a43f8ff4fcb9382715427662f5212'),
-      (218, 34, 34, 32, 32, '4d7b3995c800f5b49c7c970a0a91af4a48b0f27986d7a674dc9d3528a83abc89'),
-      (219, 35, 35, 32, 32, '2ae2656e200d206e227f41b35cb0a540a8556d22e8ac782559b2401745997594'),
-      (220, 36, 36, 32, 32, '66f8900b438c0df6250595f9e81eb5e35e8b7e429fdd624eb903ec90b1699bad'),
-      (221, 37, 37, 32, 32, 'bfe4794ef7e4a05feab8b3f79d0e89310e29b0a61630bae588976e9b0f35be53'),
-      (222, 38, 38, 32, 32, 'a23604f694cb9b86ae4fcad7e58d6e10635084094a43986e55dab32f23e4b8ff'),
-      (223, 39, 39, 32, 32, '8d4af05a9a6a373252db6e74a8f22e4ca8f9a4898715afc901c491434198de9f'),
-      (224, 40, 40, 32, 32, '0c55eeba48c56baaafc43db686b1e3ab16a806af619e52f7c83837456e12af98'),
-      (225, 41, 41, 32, 32, '4aaa1f773e2e377095decd269089c5caf2b455ae5d17fb8fbf0eb7d51a886afb'),
-      (226, 42, 42, 32, 32, '87f3393404469a0e378ded7038e0bcef641972d86893ec07db2008718fc7f5bc'),
-      (227, 43, 43, 32, 32, '97aa8d19d4ecac97b6cde047a5c54c2935f851c03a24bc9cdd73043bebb174eb'),
-      (228, 44, 44, 32, 32, '000bd568f6f7b59f1bdff78c7220d9d4682a32acada26db5837286132bf5dc3a'),
-      (229, 45, 45, 32, 32, '6b7b9c8232bcde187af36aba8019a14e2b4b0e55aea17362edf8782ebbd174d6'),
-      (230, 46, 46, 32, 32, '25f57e3dfe1a73634c6643bc398d4fd41fc0a9eeaec4b0ffc16fd03331babd01'),
-      (231, 47, 47, 32, 32, 'fdfcb0ba062d0b9f5b789e89167e1f2eac77a676c3e937b11fe1ee36c8088624'),
-      (232, 48, 48, 32, 32, '0f2211d923da64a7c8b6772052da5588809f41dfc7a37e729fdc6ca8c6a30139'),
-      (233, 49, 49, 32, 32, 'c0a4f2686e89f65c65e93c2e500c2a6591f5d71bc0411c671067c706f6c71da1'),
-      (234, 50, 50, 32, 32, '10a47ad5462e1aae03129ea1971fa50eb6d483f78e6da241b7a19450ca162156'),
-      (235, 51, 51, 32, 32, 'b774c2bc55a2c1e21d519f39f2febcbe4d13ecada93e74e9c62249ae638f1235'),
-      (236, 52, 52, 32, 32, 'bfee280306df6cf519e5d876e3baae1a38ee6ee450474583b9013126844f21f0'),
-      (237, 53, 53, 32, 32, 'c1aab6d15cd375c0565c0c90b0f82ba663d6dc9094e156119413d65afd5cf6fc'),
-      (238, 54, 54, 32, 32, '57aa0e84c98f9478929afa5ff5452262fde02dfb5c0eeb70c55041e1bdb3d80e'),
-      (239, 55, 55, 32, 32, '3a8eaabc6e686a86b8b78a92ffcabba3eabe81a42e0b460879c0f7b153d1baf9'),
-      (240, 56, 8, 32, 5, 'dd908a6b216833c7ff4b66134e7465966bf60e331b7d97ece26946effe3d897f'),
-      (241, 57, 9, 32, 5, '516849cbb88d75c60ebbae88a9c14bef6257bc589d04e2d01adfb0c7b3c26cf4'),
-      (242, 58, 10, 32, 6, '5ce9cc7389ef04a86a562ae904c2f42c8d287561a89f217e4e483542411d0bbf'),
-      (243, 59, 11, 32, 6, '6c544f20d37526f85e88991f15b9cd49229d66b73b831732db1bb21b89c69f39'),
-      (244, 60, 12, 32, 6, '0e40e6f649ad57ca5f5f4d513d64af0574cf1c88d7a69526d92482d2f8ee6588'),
-      (245, 61, 13, 32, 7, 'a9dba42ba736113543494848d5cb3acafc3b2a71e211b8b032c7bfdc134c7b57'),
-      (246, 62, 14, 32, 7, 'fec633d9f011e5bf967b73a3416e335504f838aca8815fd7b9bc26caec37bca8'),
-      (247, 63, 15, 32, 8, '65461d91fa97d0ea3c110ecef580b419d127e4d928b306a077610b0cad7e8e6e'),
-      (248, 64, 16, 32, 8, 'cf848268872ffd3d34cdaea2a564d7d1c1035c9e707fe1c31e62ad2c104101d8'),
-      (249, 65, 17, 32, 8, 'c09b74f6b69d75aa6c7dcb456a4d3660d9ff88c12acfa2b0582ab38a6e4c95cb'),
-      (250, 66, 18, 32, 9, '440438c730392be6ac3e2e9ef71f169605d100b8d3f00429e7f88b8a7a414af8'),
-      (251, 67, 19, 32, 9, 'fa1dc425bdec9c34c7ceb82251a978c5f1ec71d2b70f0419a81ec881af131d54'),
-      (252, 68, 20, 32, 9, 'eda897d462828c734d28df8c7c64696f4b01472a18fb4284a1cfed5053653ddc'),
-      (253, 69, 21, 32, 10, '26df16e1a5da259f1f6bc44ee4bf0e75af361984285139daee96eb8202c114c4'),
-      (254, 70, 22, 32, 10, 'bdd77bb8bc59c8f451e15b6b02a1ed6b0a073810bf2de3d40222097860622bb4'),
-      (255, 71, 23, 32, 10, '331d40552d5ee57939a69af92c0b9e2970ce644aae2a57ebd49400bab48bb832'),
-      (256, 8, 24, 8, 24, 'b586a88623dbb00754d06c51aa07476843a23e3f9c5edc5768c7fab206fc2872'),
-      (257, 9, 25, 9, 25, '21c6c8cd0a0310cb8048754c36a45e93b93e878a8bc91ed7889a2951597e6ff2'),
-      (258, 10, 26, 10, 26, 'c910fcb4d5d2ec7311d47a1d69d08dcff9edb48bb29d1ee315e985f034724e05'),
-      (259, 11, 27, 11, 27, '47ef70774ca4e09342dd18051323e8368ff57692f00a0e7bea14a126927e3639'),
-      (260, 12, 28, 12, 28, '0f2ca7ea645d3150706ad14a00647f3296424664d88c5cb14624800082c4fb18'),
-      (261, 13, 29, 13, 29, '0d219c263fb74a639d78c7a9144770bbcb2f8340032ddfe9b378746678b3b4f3'),
-      (262, 14, 30, 14, 30, '7933bf54585ad427d8e2b2817d79f02edbdf0a5906459a4806a9c439582c39fb'),
-      (263, 15, 31, 15, 31, '098ba5e079a8a3b9f36f4509d06b65750f36ffffe66d801fe6b3212e9a9ccd51'),
-      (264, 16, 32, 16, 32, '4b1b28c21b4b3ae4f2f55d3b47438568874d6ca18c3f3d67384cfa73e345a69d'),
-      (265, 17, 33, 16, 32, '293eb20c2bca7eb689abed5aa18d707c776818b61b1981c013f2c80b404be079'),
-      (266, 18, 34, 17, 32, 'ff9efa69e1be4b05d541f256c40281580065d60b5a0ec45969385875a1551b3e'),
-      (267, 19, 35, 17, 32, 'f146c6d62475e67c5cb3ceb1372cd935406534ef1742ee67a1b16712b3f18718'),
-      (268, 20, 36, 18, 32, 'c3ebf054dc6c000b961a6f024428e0f845e4059e6ac82893091d618ac7c8680a'),
-      (269, 21, 37, 18, 32, '46f7133e968a3231aaaf81e734f124f0498bd29349952982e82a6dca544e9a0a'),
-      (270, 22, 38, 19, 32, '761b69419159114d4ecdcd61ea7b9f7ffc193f5276c1d7ca0c04e5811955407c'),
-      (271, 23, 39, 19, 32, '5e8886ce7c1df0946be0c34889ecbbeac4e2447e289f5e5975bf56e75de32497'),
-      (272, 24, 40, 19, 32, 'fab3f439bc80678e277a0b9eb9814b50f8058622b671f779212b3388dceec2b1'),
-      (273, 25, 41, 20, 32, 'e1fc316d20b9a383fd515b819e1edd821de4c1d192a6781090013ec4e0744120'),
-      (274, 26, 42, 20, 32, 'b3d468230abd9e9503b816453fe2ef11671ddf5b3d555a9220d4b96a9c13d333'),
-      (275, 27, 43, 20, 32, '9171272b0ad83eca70fdef5499d4d960369272dffd4ff182c25bbfec33cda98c'),
-      (276, 28, 44, 20, 32, 'ea0e7035dff8435ce2063f13f8724303b1714fc8a45441cca15857c7df66bab7'),
-      (277, 29, 45, 21, 32, '2d04af019a6d5214e2920e97459de664929375b5881ace58880ce6fe2c0c9310'),
-      (278, 30, 46, 21, 32, 'ba3e18614528c2f431024a114064b98a1e4c10f02948dd6d8dcf8f03cb56c70e'),
-      (279, 31, 47, 21, 32, 'f72f6026281724e7785a0039a5f8fe0133990c4c788c4304b82922f840149aa6'),
-      (280, 32, 48, 21, 32, '685d50fa8257f5d25d6130989908e976e772f625e1812130ead09113199cb5f7'),
-      (281, 33, 49, 22, 32, '90f88096a4ef5077addc1b53152737cf0be5525001d8ed545f50619f8da2c156'),
-      (282, 34, 50, 22, 32, '1ff394bf7d9a7237f4fc5fc0fc8ad7bdbbff2d8d2a92968e3d1e9913de121486'),
-      (283, 35, 51, 22, 32, '89e38bd5f54636fecf2a6958df3a58f7fad2310d6869fa03e319bdaafd3fffda'),
-      (284, 36, 52, 22, 32, '86a3e48c0cf6e160f074505a909f43845aed236b9c552ae52f19de9d7b909699'),
-      (285, 37, 53, 22, 32, 'fe68b9a58c769d678d6b86a1d4229bc2a196735ee8346212890461da032c37e6'),
-      (286, 38, 54, 23, 32, '1adecd9962cdb0f5cc7d38b88a9a2b1f7dd10b677f680b6d274ca84d4a5b0e8d'),
-      (287, 39, 55, 23, 32, 'b92fb28b22a2a2ac8f19c93033afdf9461beed653bbff5cf44913ad530cabfca'),
-      (288, 40, 8, 32, 6, 'ef31b352ac5ac91c7202ce25d0c6aa3b209bc5f62e302e6aea69d0dfd6337ecf'),
-      (289, 41, 9, 32, 7, '1903394281954bb998edeaa0010ec2794e075a7aa4c4de43801267515922f29e'),
-      (290, 42, 10, 32, 8, 'ead5012984edd28bde884a0d0473af34777e7cdbf4d419b676e1e23cc75d2cdd'),
-      (291, 43, 11, 32, 8, '6ddcc74c48ed620e718290a0dac97a0cce6109edd76ec6a5dde1235ccdd39857'),
-      (292, 44, 12, 32, 9, '80ad2a01c5bcaaa67f50a83ca0f851e26121bb27826d22329b30661652a8080e'),
-      (293, 45, 13, 32, 9, '41f858429339a859a9610d4bee766789513b688af2a3710f872b5df1864c76bf'),
-      (294, 46, 14, 32, 10, 'edfd146544956724cf1df0ab7740f9a15595e2626ee05372d204d66cc9b065aa'),
-      (295, 47, 15, 32, 10, 'ab0a7bce94281a114e0802b12c0231b21d43b046722ac33d327db8d69ba68817'),
-      (296, 48, 16, 32, 11, 'cbbe19c6e47c3bf5cac60903c48dec23b6254ef3b1e12ecd86498ba821722dc9'),
-      (297, 49, 17, 32, 11, '10e4b0347815a4ac64de3546e4c94603a9caf180f4f9dccac830d60b3686aefc'),
-      (298, 50, 18, 32, 12, '91e84f24cc6cc957ba87d6628ca1e974832799a90536b859cfc97b6264621fdc'),
-      (299, 51, 19, 32, 12, '773aa4ff4d84579f406d0053943f57f14124c9459c18a09e462edb6fa6285583'),
-      (300, 52, 20, 32, 12, 'a9bb576972b00897b29ed517242a49a1cd799b260f955e5079213becf247eabf'),
-      (301, 53, 21, 32, 13, '50f06d43b2d11da3c25069b5495731b86be2c47e09a2975ffae36f0d354b3130'),
-      (302, 54, 22, 32, 13, '3380f5cdb13a86dbf9e74478099f7e02c9093c7efff8506fecc66a9be1c91d0f'),
-      (303, 55, 23, 32, 13, 'd2f9af13a430d1cebd51c0fdf1701377da587d72803b917061480187ff39fd25'),
-      (304, 56, 24, 32, 14, '1356d4736ebc87700589a18f186aeb82f7d6bae2da2fcbcad85bcc83223d85d7'),
-      (305, 57, 25, 32, 14, '39df5e325f3c35234e5e284b44d9f8b65c70ca083809b22364a36c77f4264786'),
-      (306, 58, 26, 32, 14, '2b7798bef8ace69b623b8c25b244a9438c49e37639a4d17fc3ca2014cf6ef8c7'),
-      (307, 59, 27, 32, 15, '8968d6f63a56200a447f71ba45388a01adc8e87a9a54f0245441dbe9f70a56b3'),
-      (308, 60, 28, 32, 15, 'bace37d2bdd033f4ac88d889fd0c7202e1bfb78dba77c1bdefca22b04c881853'),
-      (309, 61, 29, 32, 15, '78baa350bcdb0dab8376da31f2b2b103aa4c2e1e34dcb2abdcd9e0c162464c9c'),
-      (310, 62, 30, 32, 15, 'c5d8e7f774495992994813ce1cdd4e849845fe415d40cf7be55c363cf96a2f9c'),
-      (311, 63, 31, 32, 16, 'db52283b213c44425582c18bac99520d9d175c236f5ce2cf3bd4a5feea9946c0'),
-      (312, 64, 32, 32, 16, 'f03d40f4e71d8ff7d96d91c1ee51e0c5e7b66965610d9fc803ca5451edd0915f'),
-      (313, 65, 33, 32, 16, 'b7b1e4ef8acc5046fc26642280a2050e255e6e2d88756979634d9bf4641aa3c2'),
-      (314, 66, 34, 32, 16, '08b0bbdc068ff3cb6c3f53d2106e03395bf26850ff2eb6f52a6572f6fbff0d37'),
-      (315, 67, 35, 32, 17, '469271c8711af1d894eeb07f0645f6e4fa82f975a9c5f80879ca6dc17ffb46be'),
-      (316, 68, 36, 32, 17, 'c792107dc0b0233353468703180f4ab3649d4d7cca91e060e39f21675b5c28d3'),
-      (317, 69, 37, 32, 17, '7e5f8bdefc5a13f8511cd001ec86aa2cf72234b6ab43361bde9766a02de84e83'),
-      (318, 70, 38, 32, 17, '4358bebca0d218f2c82e9a3e704f89c7e54aabfd3ef3a21c8d6384cf40d3a2b2'),
-      (319, 71, 39, 32, 18, 'de05ef67920667df386646c3ae2e75a5b16fbc08eded30ef13c3f14a1002a8a3'),
-      (320, 8, 40, 6, 32, 'a6ef8c46e2507c02ca638d12d5953a670ac20b5b2084841d53494214ed4da0fa'),
-      (321, 9, 41, 7, 32, '10f5039b06c37106f0da16d9d1bd66c1ac717c8cd18db9f5bc8f75650c16db32'),
-      (322, 10, 42, 8, 32, '7aff5ecd41f8651084c800ff825ae6ae112a53dda2fd265e985c4b7c42cfb04b'),
-      (323, 11, 43, 8, 32, '15f059e70017f92689004d40f2e81cbbdaf6c23a472527cf86f8888f8ecfcee5'),
-      (324, 12, 44, 9, 32, '19a8dd0818753cdde87836540dd0368eca68bd2a3013d517ea5c72aaca0d32ee'),
-      (325, 13, 45, 9, 32, '9c2a3cbf084581def33eb2213135d84b7b801de106590f289a2ba5339c26dd15'),
-      (326, 14, 46, 10, 32, 'd7e9285e61948ad1ef3f105d44c2aab2af6879723c860d5ba48089a55882cea7'),
-      (327, 15, 47, 10, 32, 'd9acbb9ca65e83bcbfbdb8f5a2c1592778f0527de6da8db12a10b85e3f0f3e2a'),
-      (328, 16, 48, 11, 32, '686de7ddc99d67e12c1d6b86a15195b281a172b78bc5df4ce8077454cbb136e0'),
-      (329, 17, 49, 11, 32, 'c6766c080a03be31d8b64a8e1dcf9c1191b21499dcf5aa1aa92bc9f460201d52'),
-      (330, 18, 50, 12, 32, '398578deaeed2bf6a4c6f9ab190ccbd87b44b4c9c81ca1346837c1a531fe4e2a'),
-      (331, 19, 51, 12, 32, 'e02cba707b746943a720fc2cd86ffd9fb81c928e07b4f409d6ea6674ef05ebc6'),
-      (332, 20, 52, 12, 32, '09d432968821c8a13f04ec6eddd875e5fef4ddbc80476ee2d4964a57d75aa608'),
-      (333, 21, 53, 13, 32, '5ed4bf0bdfff3476ef61c1b0d51005be14b7ee0c4834bf94ae97632708067e41'),
-      (334, 22, 54, 13, 32, '0ab82765b782ab7efe31f2e66d38e78a445d4be857b43d7a31da7a748efa261c'),
-      (335, 23, 55, 13, 32, 'db4ca56f096f798c44c5aff68d8bf994e30a3e8a125a5691b98b991f480dc9fd'),
-      (336, 24, 8, 24, 8, '4b077255b7c71857ded91e8a73be02b9c399247e9f78e2dd631abddb6f237278'),
-      (337, 25, 9, 25, 9, '63e3a77fe40c6e7ba9f837c04922dc59f1498d6989aae708bf693f49e8796e5d'),
-      (338, 26, 10, 26, 10, 'd84d379e4218355023f4f1bd15bc45a0a0cd3b47b9579538b07feecc10f5220e'),
-      (339, 27, 11, 27, 11, '97e55a11d9a590a95a9aee871e8f33bf8b5d1dcdfe8bb362b5ca8bc3bea87a13'),
-      (340, 28, 12, 28, 12, 'dffc7105a7d3606d6afdcbd742d9228ec9f404aef47a2b52c4872a39c6556300'),
-      (341, 29, 13, 29, 13, '15cd9a8bc196c321693224ae4b5166b1c4814a25ca9217ebb7f8795446b3bdd0'),
-      (342, 30, 14, 30, 14, '42e9adf67c4f242e7922f62fd3355cb0da60f1cfb6d157736c7cf5afb5212c92'),
-      (343, 31, 15, 31, 15, 'ec78a2ec1290167dd24718b63ed4a562392e1a3405899a637ad5449282ae149b'),
-      (344, 32, 16, 32, 16, '0045fea1bfafeb0c99cc212b2fec50a0c88f734e35d558b20c40b1f3250b9773'),
-      (345, 33, 17, 32, 16, '3e3937baa5b60062b57bd2df63e3118c8bc4bd1f8f92fca8bd00b360156a4ec8'),
-      (346, 34, 18, 32, 17, '6a02e83af0960c71b3e23cc5dd38bbfc53788e4e0faeb51a7b299c926d323f30'),
-      (347, 35, 19, 32, 17, 'bb26b0e227b0990972e4bbb6b39da81a72687034fdfd61c09352d25503b21f84'),
-      (348, 36, 20, 32, 18, '824c1cf841898fff7be06b04ce27c161cb8cc95a98623f5e34d5d81f97baa6f3'),
-      (349, 37, 21, 32, 18, 'b2fc68f8849df7d987568b98882b6386ff4334eb536a7f4424cb63f44d58d08c'),
-      (350, 38, 22, 32, 19, '0500c9abfbe8fc3b9b4c4a198c669641f5808797adbfc2adcd8bd0c685aea66b'),
-      (351, 39, 23, 32, 19, '94d9e3bb76976b89dd73d246d8c9b9e2a10bac12fac6db958f24e3ea4674d7e7'),
-      (352, 40, 24, 32, 19, '1aa067ec0ca2698f58a3e48cd8a2e7d83bbbb29f8b7ec4367a4da01102a13016'),
-      (353, 41, 25, 32, 20, '7d1bb66971dcb8b407cdf025b2c58f34384068af1f3feff3f95a9e8068a71c97'),
-      (354, 42, 26, 32, 20, 'bed8b512ce551f1bcc59c2b4080b5e2a5e1bf56d7dabb8b8db8d2d09d4c436be'),
-      (355, 43, 27, 32, 20, '837b0ab9270ac8446eaa6e8a3aaa20af32bff057e21c3dbf32f441068fe7f46e'),
-      (356, 44, 28, 32, 20, '114abc3e13bfa6568f0e7e1826fed014691ca756c2323cb742edeaad00834505'),
-      (357, 45, 29, 32, 21, '128d176054ad54a51fd8bdccb6d2c393bb1b28e5d54123e4938f4eab0f4ba0f6'),
-      (358, 46, 30, 32, 21, '04bc87470e45ca05a87f1487b0d0bc4ece287bd949c6c0e11a12922b9c8c169e'),
-      (359, 47, 31, 32, 21, '1a55bf48e9dd3648b4c92f2e2871a832a62bbf65704a14f2e71446849435d23b'),
-      (360, 48, 32, 32, 21, '477e3e63f0bf601a89052884126eb776887be4e4a22fbcb4cd3100b2a278baf8'),
-      (361, 49, 33, 32, 22, 'e0a0fd19562dd7f8b4db20842b28efbf148db3aea686366de2214bdc47db3313'),
-      (362, 50, 34, 32, 22, '52bad392a87fe225b06bc7aee5598bd1bf789adf61d913a42d8c1c5c6a7e3509'),
-      (363, 51, 35, 32, 22, 'e7069114c28388e79e1fbdeeb43d15b9452d0108770f65fd2ee8a23b0a413bbd'),
-      (364, 52, 36, 32, 22, '0cae2bdd7ecf3044b5b4bf77a0819360426dfbfdf745aa7a0307da55dba3730e'),
-      (365, 53, 37, 32, 22, '777f1412750ab4620c0545ba8540ddc36f62919287708aedf518205caeec0639'),
-      (366, 54, 38, 32, 23, '66b70c88c7946364957430189c13d8f848a1c6a09bc3fcfe5bbefb13fd731ba9'),
-      (367, 55, 39, 32, 23, '58d53bb732b06f41fbb621b52a2fd7ff449cfffc92a0bb0fff0d48594d020334'),
-      (368, 56, 40, 32, 23, 'f7eb3c4cf0b4b6e1e47eec5068f0c7fa168db7d35d311d2dcb2e3fb637e17611'),
-      (369, 57, 41, 32, 23, 'f461783a22b96b09932f1c7bca7ccc21dd462dc276e0edc2c5ae69582e5ceea3'),
-      (370, 58, 42, 32, 23, '8ae63d4c0f2a07e527966b5679b7d91e6655e1798c68fafea1b8a4e6df827b2b'),
-      (371, 59, 43, 32, 23, 'af0fa53f9fcdcb92081b401fbfc0553c24b64d7e594a6864961a9538a685cc10'),
-      (372, 60, 44, 32, 23, '2b75354881536952ea68f23c313394ff669d6c8494cd06b6f99671570881aeff'),
-      (373, 61, 45, 32, 24, '44a36ae49d1487495c021f11788a0ce2e089347e6e9f95b13a47a52e384e37b6'),
-      (374, 62, 46, 32, 24, '62c3be702f90247826d031e462c0165040ac8a42123f0c2d7615a389e511a8da'),
-      (375, 63, 47, 32, 24, '94d3096935953ec3f2b030713c4cc68810c91fbf3d59bcdf89f341fb1ee66301'),
-      (376, 64, 48, 32, 24, '342c467ba1ccbc46f199de3f6a20d199c39e209fef19797df770dca39785f44b'),
-      (377, 65, 49, 32, 24, 'a5dc2b818f542940b0b9a00ccbf8560b8401346bc5a464c80c1264d5e7cea41b'),
-      (378, 66, 50, 32, 24, '3fea8b587fa58df6b55579580850f537ef4d1fdf1847525b88125eddf2404a04'),
-      (379, 67, 51, 32, 24, 'bcd9b92a887eff70f45d51b26199c944869ef003a175913642deda0c78fb11ed'),
-      (380, 68, 52, 32, 24, 'c2d2ff0a2c5a5e774585134af7643d0f1980110ae5388bee93edeebc0562e257'),
-      (381, 69, 53, 32, 25, 'c1b881ece51845a2b64fb029b720fa6f274b8f8288b7cbe79285fb7b77ed83d1'),
-      (382, 70, 54, 32, 25, 'a88bd8096be4fbe1c28c26faa5dd3bf940572c37336848cceb0ee18ae698c353'),
-      (383, 71, 55, 32, 25, 'd06153759d6f17ab5cab7ac8a9582303b7d23ceb4423d81f3a9f21781798bfec'),
-      (384, 8, 8, 8, 8, 'bb625b0296e56dc4549ea5111f82c04f11e6f489c4c4dd18696995c3c6ede184'),
-      (385, 9, 9, 9, 9, '1a6f80a6a0f1d16608f7453d54e7df78980694a791eb96b521498adbdb87c676'),
-      (386, 10, 10, 10, 10, '12e47c90f81ad3628a2a5021137590e05b32490858eaad0ecc041773c3277587'),
-      (387, 11, 11, 11, 11, '591a337ee7d3a8a1d0223b73ac4187b20f887cebe334b38b304166d32fd23a19'),
-      (388, 12, 12, 12, 12, '2d51f269fb9a39960924f15c96f4a36901c01da1fbe3aaa9fc940e08ed8a5b6b'),
-      (389, 13, 13, 13, 13, '095f4a0f90b7261270e34c7eb9b7084e27e514cf6afb414fecad2e5261e4f5b9'),
-      (390, 14, 14, 14, 14, 'd841dd589203e6b5699e984ebedf6b64f65825befcbc9ade10f90e87cc8a1cce'),
-      (391, 15, 15, 15, 15, 'ea66d1bf2fa9c5ed6a5401f8e78b0c8a8a0fefbd4936b8bdf9760b135faf47b7'),
-      (392, 16, 16, 16, 16, '581ff1757f579f45be66d4066eccf853dc22b55394b0cfa946e34d307b73ec3a'),
-      (393, 17, 17, 17, 17, '55b3d9a65556d2f3a372a726559ceff071aa1e913ebfa4642c3753d39d8d5181'),
-      (394, 18, 18, 18, 18, 'a48fa1eb132c1cda528cad3f10276b712c9b579d94f5cbdf5d6c55ab8ffc3361'),
-      (395, 19, 19, 19, 19, 'fff70ade8d3550aefa1a5320c858119fcdb980230dfb4b7e38d29322ea00e859'),
-      (396, 20, 20, 20, 20, '36fa4fd8d91cb265f7b38f933d76167b0e0f90039ec762e247671c3b6fdc26be'),
-      (397, 21, 21, 21, 21, 'f05bf7b10d88e95fec4cb803097d9b7b30ca283e7b1e2f0882d8296679e54fb9'),
-      (398, 22, 22, 22, 22, '153614492c7e1a5fdc237c9b311b38965288206b58957d76e134c05d2d376e12'),
-      (399, 23, 23, 23, 23, 'f7ffacb12c96ae68ce6d4b988cefa941f7bffaae0e4438017bb90ea734f6099f'),
-      (400, 24, 24, 24, 24, '81ccd45fdf0365d62607deb16294ad1e2c1b5abccc47e5af164073650f3a2f7f'),
-      (401, 25, 25, 25, 25, '2b20ccf8124bc6a0ce7f4dfb04ffb0f96f4d1d7dfd8c2fc6d615859d707044f3'),
-      (402, 26, 26, 26, 26, 'e1fb118f0bcc57bc28243919f28ab17136a3a0d7422a5c07f555281b0aefdfc3'),
-      (403, 27, 27, 27, 27, 'd41e80902e45b9724113a50388b3ca8a44b58b68a81e48865543a9c6c9fb7dea'),
-      (404, 28, 28, 28, 28, '03c84c2adc391af1fc25b0a068caf097dc1cce2e613df791be7181e74fd58de7'),
-      (405, 29, 29, 29, 29, '56ef836396c64e9ddc52ac318dad91d70f062c52ecf0fa04323fbbafbe6d7e44'),
-      (406, 30, 30, 30, 30, '72b2efd735280a91ee5aae5bc78fdbe2765656cc6e717c488ca68f48cca80888'),
-      (407, 31, 31, 31, 31, 'c746e8842dbb970157447ef45ccfbc35245e7bc22e619cc307274c5bc1b31872'),
-      (408, 32, 32, 32, 32, 'c12539776bb845a74176f9d51c3eaa9694234831d50dac91425a837d3fadfde1'),
-      (409, 33, 33, 32, 32, 'ecc7b939eaa6a04d0d9863910f5243be6d3f8a2adc2ed9f2e04ac5b3a87adb33'),
-      (410, 34, 34, 32, 32, 'a6f1e682df451c80d20623d454ad98cbc3556ca5b2ca524f4bae84788cbff82e'),
-      (411, 35, 35, 32, 32, '2642576e9fd15836984376bff3504c9e8623d7f8aac259e22f6a8124c918346a'),
-      (412, 36, 36, 32, 32, 'e49355efe3f92f474e9ae8aaa24e372fa64b9616d36cb969a3d8867eea58269c'),
-      (413, 37, 37, 32, 32, '1eb5a84df45336e8c252b98c3f2e2636f432bec3cc393582fb283671e2b7c9b5'),
-      (414, 38, 38, 32, 32, '70703020da272f8e7a4fe9d306083d5595651a7bd22e84ec7eeab10804e3fbfc'),
-      (415, 39, 39, 32, 32, '9aee66d0def4ff52fe8dcf06c1c5eb7b658cd10ea48cc715ef25ab2b0587a0ab'),
-      (416, 40, 40, 32, 32, 'e8305220857fb614c0e95ca803a1fd36f6e03b536455d6462cd06e24d84d97c3'),
-      (417, 41, 41, 32, 32, '0021ee73c2982bb6da21f8ff7e008c54906d7dbce5efaa20e3a95c930c53ace3'),
-      (418, 42, 42, 32, 32, '53d03339f6eae8557fa6a1a8fe47b9b956393af5a38d1d50c5e600af9dbffa6d'),
-      (419, 43, 43, 32, 32, 'd5b8d21e4d15b641fd8e7220ae19a282427ff4d6883a2f42812ef01289179a33'),
-      (420, 44, 44, 32, 32, '2be10bc024bd59461a4bc5f377d1795e910ebff8210675a4c874a9aaf1a61316'),
-      (421, 45, 45, 32, 32, '259be56dbebd293f409d024c036cce384c7dd2601e4794f49d9a0115595f7e80'),
-      (422, 46, 46, 32, 32, 'be12f47a31b51987d35f40f1f0366b11d0e4da8fe79232425774eb3e73cf8bbf'),
-      (423, 47, 47, 32, 32, '74a662aef3eaf7c0f1290bde0ae02455a1c793f8f8d60ebac7d0668e1e3b5018'),
-      (424, 48, 48, 32, 32, '463af11e54f39611940bbc5ea2a5f1468087540eea0a3bd2130895f1737d5aee'),
-      (425, 49, 49, 32, 32, '2caf0cf921334b183fe5e0737d787c12f6788a8a358efb6abae31fb1515c3445'),
-      (426, 50, 50, 32, 32, 'c79f35f7bc753605dbb76db41224b7fbf69606cfeb5e8daa6fe8f3d57b937b87'),
-      (427, 51, 51, 32, 32, '45d8b2ec2e227fbd9ef4eaf4e7610a83b26614826e25e6dd42e11904148a027e'),
-      (428, 52, 52, 32, 32, '61b0ebd9f85ac270eb6c97a70690c35b38cd901b13488198853da5e4c12ed575'),
-      (429, 53, 53, 32, 32, 'ca55082ad10f1cf5c027cc7f3851e45ab726a55cbd906bc712120a03bc368658'),
-      (430, 54, 54, 32, 32, '82987d91d170246b51028c9cd09af73a102021bcb942ccf390ef472c2919360c'),
-      (431, 55, 55, 32, 32, '8f6a581aca765b20e3d21f3d31a34c1d513bf85cdd81792af53c0cebe2d0c1b0'),
-      (432, 56, 8, 32, 5, 'dfaa717ab0da6c857804ae2d6ea9269242cd5446655827d815e1d16fd43366f0'),
-      (433, 57, 9, 32, 5, '74f2896d736c33f6a5aa81fa06d602c7925c3ed050d7470f6d2b8db170f68cd4'),
-      (434, 58, 10, 32, 6, '129f134e0694145f376cbb3dfd498d9b1b10715944da9085390129ea798c5d4b'),
-      (435, 59, 11, 32, 6, '77342f7775eb70db0b0dfabe36e25aae0721f7f6bae1d1108ef5a0247354f263'),
-      (436, 60, 12, 32, 6, 'e964fb9f22d8c637997da2a126b94b9d186c0439290301b8bc6c466443d499fb'),
-      (437, 61, 13, 32, 7, 'ef0a4df33a4af041ee3be1bd84c417497002a8bed8c6ead205dd622b5a1d1678'),
-      (438, 62, 14, 32, 7, 'fb6759f8c9b6ca36040d973a8b0cbb6e8be02e486f4958b5b10190403ddc3388'),
-      (439, 63, 15, 32, 8, 'e7827e7972d4f83ffff5eb112c006710472bbb1c92f66194c48ffee2a31925f0'),
-      (440, 64, 16, 32, 8, 'b719f7a1776fdc7ce95ed8a34867e932dc73666961be83c5d7e6ee0fc7fd37a1'),
-      (441, 65, 17, 32, 8, 'd202c0b35f87ccc6986c8cb5833f6a1a5ad13c02fb7233d75d7dbc4a39f6738b'),
-      (442, 66, 18, 32, 9, 'a6059250d3c78e3604a80025bd819cb031c22265e62847c7174fe32aeeffc252'),
-      (443, 67, 19, 32, 9, '4f2d6a4157a4586e3691c832656b536fc5d694fa88f8b6d5dc776fadc7cb8f21'),
-      (444, 68, 20, 32, 9, '055eba0d0761db4bef75f31693658c706bc690cedc866ff3a9c154bdd11e0423'),
-      (445, 69, 21, 32, 10, 'e70c31c0e68457d6ea5e01dc5e1ae1dadf398da1712bb34876e05d95f9e4c045'),
-      (446, 70, 22, 32, 10, 'c7041db2ec4b5c61c4036c6a6707edc71da35476465ce1f04270f49d92f81063'),
-      (447, 71, 23, 32, 10, '839704884f9a683f794f13062281ab24caeec27491ff54efe63e5cb80f50f898'),
-      (448, 8, 24, 8, 24, '2c1d7c0975d9fbffc7feaa7ad00eef9aec0b52d663595c882a19b6ee3dd9dd98'),
-      (449, 9, 25, 9, 25, 'ffa8594321ba3a4b2e66738642862102f4ecb41a09d78e016da854ef8cbf3f80'),
-      (450, 10, 26, 10, 26, 'def3c192ff50706e3f8a5077fde68dac8fb2a5d3b11162c24f8c5f66e16e90bd'),
-      (451, 11, 27, 11, 27, '2a19a527ac7f81d54f0a3d26e6a1c3915f43069d00005768d66f93be13f4da94'),
-      (452, 12, 28, 12, 28, '53b9763e32d019fff58b2601c7ed110e47a7c0c7a42d7d3762c6a9b32c758d88'),
-      (453, 13, 29, 13, 29, '278ef41e146a1d1d0c4fee898d021f5906996328d914c4a185f2d53f52b22ece'),
-      (454, 14, 30, 14, 30, '3af4b434651d37d0ae215af476ffafe4d13e93ad1ed995add997441292a1441c'),
-      (455, 15, 31, 15, 31, '80075f2001e1d388d847cb8eef6ab388f42c5b2286e178afddaf32816019e218'),
-      (456, 16, 32, 16, 32, '9517f79836e02b6871a745834e922261351d33332f8b7e2d22a3a17ff2395535'),
-      (457, 17, 33, 16, 32, 'fd17a1755388af87c74558b13ccf14202f49417859bd1e155588a9d5c643e28e'),
-      (458, 18, 34, 17, 32, 'cbd5daca603a9582d3845d7f728bad3cc8a9e35259925a1ee32e2eabea38062c'),
-      (459, 19, 35, 17, 32, '9089a00a63760922c040d7db7525ca802a99fa76bcf2af41032cb95dfa61a3e7'),
-      (460, 20, 36, 18, 32, '57c0e2ae3c1fa11ed341b4f78ffb364215feb0ed32368c0d384fb8502d8241ea'),
-      (461, 21, 37, 18, 32, '7597f14fe7e6b50b66c61952f768e5422fdb4a0d91c81c17502a633345317d47'),
-      (462, 22, 38, 19, 32, '73fe6347b352e794991003d29cc166fa57a42bbbad3d5ecc70b6bed864e52028'),
-      (463, 23, 39, 19, 32, '449068404b11dcd43aa8a2b88eeb9ca43b968e104a70f4d1b44c998520057527'),
-      (464, 24, 40, 19, 32, '6fac7b6b17435436a3c1dc5b938cfcb1bedd2c0da8e68e90da9e297c915e6c50'),
-      (465, 25, 41, 20, 32, '47804c440f0249e19cc073b7be16a130d47a5ad6b2f46b29368371a5609e574b'),
-      (466, 26, 42, 20, 32, '5623b4685052b4c9cf7acf3701c401c2186bf925f3e33e8b4bbfc48180eae9f7'),
-      (467, 27, 43, 20, 32, 'fdd2fb1a0a97f5d0086b27930ac3d5945e7100fb6fe99cfb966d398c5ad5ef44'),
-      (468, 28, 44, 20, 32, '844475c643a89f5e777ce4781a320cb197448d91e3bc98ce79b425fa41f56a35'),
-      (469, 29, 45, 21, 32, '743dffd43dbd99581397243119c044a3e6520fbaeaf1daa7a8e8bbc0db4f3a62'),
-      (470, 30, 46, 21, 32, '2cacd0c67f84c6b74c4331157dded3708eacd6d59e666c7dfbc882808b68851b'),
-      (471, 31, 47, 21, 32, 'e52712f98f0bafb9ed669e8c6a0d3f96d1123cedbd769cad112042c880beee14'),
-      (472, 32, 48, 21, 32, 'c623ca10f32845e4f850a0033f8bf91268a0065810b84dba707245730a893b98'),
-      (473, 33, 49, 22, 32, '4dbeed31b3ea40ad3e3c7d91bf35afcf62a299b5e54b66f4484f5509054d5fdd'),
-      (474, 34, 50, 22, 32, 'e1ebbedc8f9b45fe484db7c3c6fe5fed8a8bbc0da612debec3562998c13e0ca6'),
-      (475, 35, 51, 22, 32, 'c445248f2786c32f524ea69dfca72c17d5ea2d2aa6defd9691f5a97c234ff1c8'),
-      (476, 36, 52, 22, 32, '7ce99e26d4e6ea24d99f29b710a4d1191d8326526b984006356779d290cdc28e'),
-      (477, 37, 53, 22, 32, '556239982930ea34332747a50c2a9cd72a243f3a5193f2eb1f76e102944db7d2'),
-      (478, 38, 54, 23, 32, 'e21524d226c4143b803bbf7b51a52b85d0e5be25976d187d6945da9dcdd7ad73'),
-      (479, 39, 55, 23, 32, 'e14c3915e1fba9886e6f1c6b3cb525ca971dd2f71431cc210fa71323d0f9b7ff'),
-      (480, 40, 8, 32, 6, '0555c23e11e2e560618d827b0e0ddfcacc3c2d39169212334a76c86bd70eb35a'),
-      (481, 41, 9, 32, 7, '8df40f0b379f87764c8bfcbe8d065edeada29a92cd8d6eb3bcd8318ca21010ee'),
-      (482, 42, 10, 32, 8, 'e2b480c1b89b42c8b057b221ca231ae50cdcc3bc23371ab0f6e5c6d056e9ca32'),
-      (483, 43, 11, 32, 8, '8e7d4a1604edb703c480f0573a02d0a8c28f8e2e3e27496fa980b453b6b9646b'),
-      (484, 44, 12, 32, 9, '794a365189d102626d49a32566b7d2f73562a17d03e5624aea82b1f496eed5d3'),
-      (485, 45, 13, 32, 9, '2000382fa6567bbe224414c299058bb1b7f35ccae86037bd809d47c1c9834c1f'),
-      (486, 46, 14, 32, 10, '73e562d6ffa4d89fccfef27df79df47967c5f0d1a192163d88ee707c5aa7dc9e'),
-      (487, 47, 15, 32, 10, '5481a395627f3488a7b75929ace30d87e6df48b43d005cf33e75a1b9c607b100'),
-      (488, 48, 16, 32, 11, '033e0639be088fbce958ed2e4e224ed0f1f4cba252af28e67bf5f467d7e53931'),
-      (489, 49, 17, 32, 11, 'f549cd290cdbf2e0e1bf90d024838ed38e6728d2cb4d21a30872cf2732b7d48d'),
-      (490, 50, 18, 32, 12, 'd803a43c818a38cca67d1ca24fd0c9cc38bac8d0c96694f78e09a486391cc076'),
-      (491, 51, 19, 32, 12, 'eea92bcbd744078de6e61b20fcdd57e08f99eda0290f076e65257f3993196592'),
-      (492, 52, 20, 32, 12, '9ef5453e2cdeabb7828251bc3609a59b87832ff26ed4c0955f7a4422b0e13854'),
-      (493, 53, 21, 32, 13, '9d6d2e77676e09bd564c87d83ec0b424ea8554775321f11499e613a8d8ec29c4'),
-      (494, 54, 22, 32, 13, '5194d3d90e28428651699e159df8e03665014bdf9ad85de2c1947df7351da12e'),
-      (495, 55, 23, 32, 13, '54b7ae4525db92e2c59ec54efefd3cdaf2571bb66e623b1577ecc76a2e1f51d7'),
-      (496, 56, 24, 32, 14, '2ebb229b85ab221c5286878e8985597c202d0a1ba0d3151322dde8c70f5468b0'),
-      (497, 57, 25, 32, 14, '0d5dab9e2e10aaa61e2e55b8850aab3b76b01dfb157ed9113c6837940da1861f'),
-      (498, 58, 26, 32, 14, 'e45a58846d1ef2316a83e382818464b6140af211c121ed7db731d713350c7c51'),
-      (499, 59, 27, 32, 15, '5eef35e0487b102d789d19d315916c1305a543b0f0a7b99fe74fc63f3f206584'),
-    ],
-    149174: [
-      (0, 8, 8, 8, 8, '4c5faf1b141afbede78a51c5ee67252d62edba5b4491860ad040a2e20f9c1f7f'),
-      (1, 9, 9, 9, 9, '307e71e8c7c2bd7737bceda3351d05636a96304aca1d0c738da3ca2c2475c7e7'),
-      (2, 10, 10, 10, 10, 'ae79ac4b797bcc0c24d5bb6f639e927dc6a54b81fd6823415b817a7e1d88cf16'),
-      (3, 11, 11, 11, 11, '3d9e6dd02444cd112a7927e7f8373d6075f98e485eb91d8831b448aebf780217'),
-      (4, 12, 12, 12, 12, 'cc0a1e21e74f41b7a9cdba46291f18f88419572a3080ee93dc80e36cc1e4334c'),
-      (5, 13, 13, 13, 13, 'c983e83b4e3695ca8e0a6ef54b159806a634de282aaf34ba3a0af22ea4ac5a6d'),
-      (6, 14, 14, 14, 14, '4a86c266919fe052237e211e44458e1d5505905326b692e236f96bb12d10feb9'),
-      (7, 15, 15, 15, 15, '8c403609ab373ff293dc8f6437a46ed929c5850bab1e71ae8f86d6bc3255821f'),
-      (8, 16, 16, 16, 16, 'ca33b2ac96603d5793b2b6cc92a3aa12193fb516b4f0fa516ae73484af29d5dd'),
-      (9, 17, 17, 17, 17, 'b18a36179e7f4450329df3a49f824dae2e8bc917942602fabfb17dcce64f8630'),
-      (10, 18, 18, 18, 18, '45bb51fdef67dcf0a4d8571956cb8300cc6ad05c1352159f876326868c939aaa'),
-      (11, 19, 19, 19, 19, '9965fce3d9e9fbbe97400d4587f8f9f9ed534df12c974cbfa77a1d8fbb2779a8'),
-      (12, 20, 20, 20, 20, '14e0fa38dccdf12c45faa0f52e3b869e5273d7c84974922e5796c5d100fa6630'),
-      (13, 21, 21, 21, 21, '4e45ad9768cb4903bf2b7393cf7d6d40767e65d20dad652c4c79eea7bbdff00e'),
-      (14, 22, 22, 22, 22, '9fbbf2e8f056c5f16e04de7fe0efbc24fbe085a4697498dea22dc22cba33a917'),
-      (15, 23, 23, 23, 23, 'e5e64ab70946a3092438624b2518ed042fb98fe27cce9437a393f71ea4302513'),
-      (16, 24, 24, 24, 24, '48191cfad05a2f5f3903e52d65b4c6535450843822645255f8da82efe71712f7'),
-      (17, 25, 25, 25, 25, 'a4b2008b20d5677858286a91efeaf8f97f5576e8192882832192402011788acf'),
-      (18, 26, 26, 26, 26, '9bafbaf02abf48425518c257a57ab584484bef7ffd126a0146ecf743daa8bbd1'),
-      (19, 27, 27, 27, 27, 'ebbf917dee82b5059260e7f9401141d3b9e4055b018762c843d33bf1c37fe032'),
-      (20, 28, 28, 28, 28, '29caeca067358e194169c074dc4a4a2b5bc40a70f329d6c62d3908e1be975389'),
-      (21, 29, 29, 29, 29, '01b0b5e1148898d9776647ae4e1a4d0bd122a06372636380746fb477acbf4f0b'),
-      (22, 30, 30, 30, 30, '8142a17f5cd4f661f8b66ef11d39bfe4a59c05c69663d65afe1ff086a34e8adc'),
-      (23, 31, 31, 31, 31, '976ee2340e51efa06baccff5bf4fdb7d639c91d3104a2ab46bd9760ed696b93d'),
-      (24, 32, 32, 32, 32, '005085850395e6be8f80005aef67fc9e2cf969275423cc2d0c6d0141b62c1ac1'),
-      (25, 33, 33, 32, 32, 'cdac051bf3367f77e8005ab6abf4810838da3bafc66ea8dd1c04c511b0ac31c5'),
-      (26, 34, 34, 32, 32, 'de2c731a24f59929ee27232ecd271db6734fb8a1f1a24397b04ee9fb2bc9bf05'),
-      (27, 35, 35, 32, 32, 'ef86eadc25875dae01f21ec4a719205f0e0abd2bbc4eee0b0fda75efce68b999'),
-      (28, 36, 36, 32, 32, '9205fde459857e3699207f59dd43b25d0f7ff2e8c9a197decc239210b30d654f'),
-      (29, 37, 37, 32, 32, '362b209568263fada8209531c276865ca6d6e4e893f691d392d18748de26a766'),
-      (30, 38, 38, 32, 32, '5c21808b5620442f531ddc4aab5886a92819338b3902503199f4813c6beacd32'),
-      (31, 39, 39, 32, 32, '8dee87f8042213fd74aadb6ec9de05da7ce17b68e873020095cf2fa7c07e2ab8'),
-      (32, 40, 40, 32, 32, '1b442cf7235114cae5e11b7716fb27633dc4dc499c000d2e2bee3faedbaf5457'),
-      (33, 41, 41, 32, 32, 'd4b753dc736884d65d67fc86526aedc340540fa93409a7cb90a7a1d337f9a638'),
-      (34, 42, 42, 32, 32, '5b24cde4fa2ff494291fe9f1cadbae5f4b02305720aba33ddef56356275d7e0b'),
-      (35, 43, 43, 32, 32, 'f639615085fb1639651e2a37a59f956e35c0b1e9748032d3b8373bf1cfcb387b'),
-      (36, 44, 44, 32, 32, 'eedb1794482de4357cb0a1c56af3b6bf5051a304e36a0b0e64f70ed16d84a019'),
-      (37, 45, 45, 32, 32, '461e42a072dad1364ce6ccc8c626965ce03f46c0146fd1c627680c834f0e9378'),
-      (38, 46, 46, 32, 32, '21620930c0673a721a8b2d9ed1737e6484cc45201d35b91e4ccdee5f4e18d6f3'),
-      (39, 47, 47, 32, 32, 'c5718e3164e121ead72f2c45a2e12f21647f5cdcef805ae270567616c81c493f'),
-      (40, 48, 48, 32, 32, '3f61c46301c353c2ddd5335badd278a656224da4b11192eeeb050c088a7901af'),
-      (41, 49, 49, 32, 32, '923e5f2b926da86059481285ae9e2d9021214a41ecfafb8c9258776cb37c677f'),
-      (42, 50, 50, 32, 32, 'd12ab6b81470dc1efdd3a819c8f0985c1af8a6173eb4425a63aa89f923176c11'),
-      (43, 51, 51, 32, 32, '240367bb74d4e10c67ca3e898bbee02c99c9cfb32269521d81e77785ae21c5dd'),
-      (44, 52, 52, 32, 32, 'abfd2a1390278001ea8a5604ad7373c6134068c1c68df407ca3267c0116a6954'),
-      (45, 53, 53, 32, 32, 'ec8fe06ef5e2b6416e4ff1cacfba07554012dfc3fb0f4f17c408f339dd5e630e'),
-      (46, 54, 54, 32, 32, 'c7f0abfc4b89a79f893a124964f0130da023d8699030a96fddd0e7cfd8d77203'),
-      (47, 55, 55, 32, 32, 'd911fdebc62e5091ecb81f1899b93e287ce1267d77e299eb454c6325d60c22f1'),
-      (48, 56, 8, 32, 5, '368972d2eaf2df4e8b54851abade1a27d93c35dc502c6177f1a4cf0b15032d13'),
-      (49, 57, 9, 32, 5, '2756a0d45a655aa08fa00fcf6853facf9c9e42d0599c75ad9b68beb1c0ecc9d3'),
-      (50, 58, 10, 32, 6, 'd3bc66af139d787d97ed5166be90d7cb3bdd180d710e88c1da5ec064c02bf1cb'),
-      (51, 59, 11, 32, 6, '9090a95a02643dd8e6966cfc1e66bcdc68c20b5ce343ed003f3203c1fa1b1828'),
-      (52, 60, 12, 32, 6, 'f131640318072c2304da9f2cb511413cc0fa30e0439be9a0f6689e722e5618e1'),
-      (53, 61, 13, 32, 7, '5e852713e3bcc4621d1ee8fa1746438bfc0984cdd08109f98aa6eb83bec0dcc8'),
-      (54, 62, 14, 32, 7, 'fc1b51fdeb1a4e9e6c913c6ccce349da0ad67db69fdc4ee9131a02a52c5a1fc3'),
-      (55, 63, 15, 32, 8, 'b75094c617b30000aa2bd3cc3715a318f7503cc6ddcc3c1ccd6441227f6b5b23'),
-      (56, 64, 16, 32, 8, 'd4a594c4750db5e36becc23434a92e31e6e97a7f8452fca67358d05e938b8cf4'),
-      (57, 65, 17, 32, 8, 'd8434345afaf50f45fbe897a9ec6df3e41196d088b7666c6ffdf1be607576a0b'),
-      (58, 66, 18, 32, 9, '88c5ffc1f51b75a1d50b5a50b9665cbbc44ae031fa47a1467aa0535789c77a9d'),
-      (59, 67, 19, 32, 9, 'a5fd869241a371a5a3f7ce0019ac88719fddf559552d1869d19992dc2bcff042'),
-      (60, 68, 20, 32, 9, '2bc30403ac6e912a14d6e2459b01be1ca946b6133ff8a4e0f7e60b84e9f11aed'),
-      (61, 69, 21, 32, 10, 'b63d67fbacd907c9ac03d70223dbda4125971e7b55c6babf1e7424ba7e79faa0'),
-      (62, 70, 22, 32, 10, 'd7efa5bd7eaf55901a42e4b195000a1e287e103d4a9447534cf1c0c6a938f8cf'),
-      (63, 71, 23, 32, 10, '483c410cc18a0ff02017c7ef9b013911e61bf4d66648ec774f3e5edc9428e07d'),
-      (64, 8, 24, 8, 24, 'd8194f138c61d37a5ef3e92fcb954fdf284a0efb9ca23c079f3de21abefb59dd'),
-      (65, 9, 25, 9, 25, 'b27e4d43694beeafa441f12d29b749e09c7257932dc7cab651256c70cd8d670b'),
-      (66, 10, 26, 10, 26, '0833e4f95f91ea2341e5cabe9e97bcd2f4aa540c79a312e1aff3172c1e021baa'),
-      (67, 11, 27, 11, 27, '668e75777aa531eeb5c6decc61bbb5fe3bce9313c83476f1fbf21ea20c5d0d8c'),
-      (68, 12, 28, 12, 28, 'cde57d8c668b311b0ba9dac1140d8614cf1a47505066852c69d875560c2aa805'),
-      (69, 13, 29, 13, 29, '5472b269b881e71fdff94b8b81d832d76b6aba1f65bbfadce6af3e0b20cd5ef8'),
-      (70, 14, 30, 14, 30, '8cb8d52cc1e7847c28c59f461f1f255a34593ba9ef3e71ce1249ee36f77b2df4'),
-      (71, 15, 31, 15, 31, 'a34681d86e1daa563e529f3100699ee4b8e44db291bd1b20c13ba39fbedbaa17'),
-      (72, 16, 32, 16, 32, '3c6ad4ee6addca1d03be04f72860f32f0b0d5ff7296ccb53ebf1654b8bcd6635'),
-      (73, 17, 33, 16, 32, '40bd53ba22462266b166a26cbcfba6b5e5632e5ca7cd30524af1b8127cfcdeec'),
-      (74, 18, 34, 17, 32, '0d6a71ad34f3380cd3d295942ed6c3f08989873d13bbd98fea25067189f3811d'),
-      (75, 19, 35, 17, 32, '36795547acbb509e33888546fd49e0ef7741a638aac8e38a83d36e2bb0b6397d'),
-      (76, 20, 36, 18, 32, '13958f067648d54bd3a9a2091f15093481653cd7e996bbbfabd3f566bc081cbc'),
-      (77, 21, 37, 18, 32, 'fa1d49fe186c0dc4e3c3f11c50d7af6c5555ecb6fd03dab9f26d64522a10a0ab'),
-      (78, 22, 38, 19, 32, 'da81848dd1fdb36022eea12f7636214498369f4b2cd6e142fc407edd8842473b'),
-      (79, 23, 39, 19, 32, 'aa9292510807e729bf59bf7bf3f23046c832bfcfa9952c32807e5c0b1b04fbcc'),
-      (80, 24, 40, 19, 32, 'd47b300aceef351cba3ee2f7378b30c0c6248e582e5703c845016459ce51fdcb'),
-      (81, 25, 41, 20, 32, 'ce02eb54039ad9a5156939189c0028aa91953d80b3827bc7cc396f279c5d96df'),
-      (82, 26, 42, 20, 32, '8f54e18ba6f3ee2b049f3aba18f86f589d2f6020a07cb9a081efa7eb9fa7cb68'),
-      (83, 27, 43, 20, 32, '7f61c50b66af43522bcafdcaf104dda4110a602986635447000b16a8ef58e8db'),
-      (84, 28, 44, 20, 32, 'b677163f5c9b59ee50c3ce44e67673a1a88b55334db759bbad4320218930a841'),
-      (85, 29, 45, 21, 32, '4386c599f0918cc65b1f13c1daec50b0696bec323c398e7c34df1e2246ccfba1'),
-      (86, 30, 46, 21, 32, '397605b74fdf0363803a9deab429b7081a86702f64cdbe38ac09c6db20a0c902'),
-      (87, 31, 47, 21, 32, '7d56bcb8585ef647b420a74067b16a83330209658e74070ab1ce3255281d99a3'),
-      (88, 32, 48, 21, 32, '10ea19b58f1586d90c1c15bb8d689d54c3f12eb73b92956e6f21d356af96f62f'),
-      (89, 33, 49, 22, 32, 'f11170d408ff51d3fd3397ec27ecf57d5c3efd48acbe2ffb030ee10ccae7ecc2'),
-      (90, 34, 50, 22, 32, '3a3d7d2f777bd442888ce20d787292ccb068ecde4392599b01a3b02c699ea6dd'),
-      (91, 35, 51, 22, 32, 'd11e2009c0389871302eebb1b7c778b2fcdbb35a5c84df2614118a5743b9e5e3'),
-      (92, 36, 52, 22, 32, '05b2c1948968c54eb0532a9061449ec8559eb8ce17d9eda60b229ed993076dc2'),
-      (93, 37, 53, 22, 32, 'db83b0c76ddac6ef858d7c30f087db848a28062b43fc58f5351999f7c20a4f4f'),
-      (94, 38, 54, 23, 32, '2bb2c9dbcb20cf98a5f42944a66019150176cf3533b107316318da1ef89b331d'),
-      (95, 39, 55, 23, 32, 'f707aef11292f11ffacd317f1169979ab4cc102f8ab091be2278a3571780b78e'),
-      (96, 40, 8, 32, 6, '7a1870a606f9f5d8efb6d60656cbcfeb9dfcd85c0e0edcc3b26bdc1609ec966b'),
-      (97, 41, 9, 32, 7, '96a47f14e19235165654310696af60246d4bc5d386df136ea786234d012b3543'),
-      (98, 42, 10, 32, 8, 'e20f935df9ca01714e35b3e69b9ec344975ff6c1b652294132e115aa686c3266'),
-      (99, 43, 11, 32, 8, 'f53fd2b4de7862b135c2df853e3c0e4a079772f4f8f9638be7a5659ffb6dd478'),
-      (100, 44, 12, 32, 9, '2c3e95215c6083f2968d7efeab4d8c3d2b051fb61591090b4b895ab4a23ef306'),
-      (101, 45, 13, 32, 9, '59ba8e466332dfb362e339885d60fa45570cfb93a762272d40898b04b47c744f'),
-      (102, 46, 14, 32, 10, '82cafe8c3ba93dd668a9dbadaca94d2e2cceb4c34abe29c123aa77a2d427366c'),
-      (103, 47, 15, 32, 10, 'c703a5056e62b99d101ff0e24866a810bbc25066b056ff35f51a55f95ad6adb2'),
-      (104, 48, 16, 32, 11, 'b14beb365661733ae38629db0d8d824745087b79886bfa5b70b12dc6fa8f96c1'),
-      (105, 49, 17, 32, 11, 'd613e1a14df09a14852bae4f1ee30e03ea9afd707c0627fc85ff3d1c55411d77'),
-      (106, 50, 18, 32, 12, 'b27861ee33c4685f0cb1001e54dc443bbdff44dd965c57da8a10f00340fcd272'),
-      (107, 51, 19, 32, 12, '6f3a5682aec302eb1c93c1fcd7277b075a2f7ea0d367e8db84748c7c59615971'),
-      (108, 52, 20, 32, 12, '948b28558a7455a4b309e8908b86d078088c3c8e5e8318cabcb595a7bcad2477'),
-      (109, 53, 21, 32, 13, '8da3668a3e27792dafd40e47c428b934f682a21204c8cb1237da51af06d068af'),
-      (110, 54, 22, 32, 13, '2758c8fd2d7fc5924ac23ccd57425f8775c50b22be93ed1414c8b80fc36b2258'),
-      (111, 55, 23, 32, 13, 'd430e67f0b94465b9874821d7a0aaa03da4e549af6f6f4654676d494327787e2'),
-      (112, 56, 24, 32, 14, 'ebcd8fabd5acfae22c77cde4a1d79fe9b5014e38248157dee43eb56041245d03'),
-      (113, 57, 25, 32, 14, 'ae7be28f7232548caff72ea25ac147993c5f179e8ec024cc19ebcd01bbefbc70'),
-      (114, 58, 26, 32, 14, '18a38ed014413bb6f41de18296f3faff205ed700ef78124cbfe306e3e168169e'),
-      (115, 59, 27, 32, 15, '5c99f8aa4b31cac6b9f4713d74c06321b4ee3fb4e4d9ce37240c2f394a990744'),
-      (116, 60, 28, 32, 15, 'ede7926146859c3e1eaa215cb2f4dc1280407c0c3450650b6748041c6ff6ffb6'),
-      (117, 61, 29, 32, 15, '6dd9d56797e536c8a2ba9852460fd9f1e90aad7ef6f34f91b9f20c0b9a4e44f2'),
-      (118, 62, 30, 32, 15, 'ffdbfe87910dfebc4d4569c755666967a082217feaab5d33d2493e5f17ecaa50'),
-      (119, 63, 31, 32, 16, 'a178e37bc656e85f55ed28f4776353f89c8c3a927c3a3a486b9fb4b9ec337de1'),
-      (120, 64, 32, 32, 16, '9747aa8476a6ae1caf7fbfc4eb517442b906cfd58a9578c2bef98d1bf31f6844'),
-      (121, 65, 33, 32, 16, '91ce86334ce890c6eee404379f8328d7483125195645e3d40aa3dce04cf76855'),
-      (122, 66, 34, 32, 16, 'b05d3e0728b6240312bf8de674b9d063f72afc1d9a45db5f6b3b837d407c1faa'),
-      (123, 67, 35, 32, 17, '4a965af2a5faea19c3b4dc22ac00b5992c81883895aa5b9d3b6b5225d5f3605d'),
-      (124, 68, 36, 32, 17, '866d152779a8da368b14c007b4f74fc1ea9423dca6adafeef4c7ceb152bca3b0'),
-      (125, 69, 37, 32, 17, '84e126924774062251e6bceec29bf4af782c125cd4f9b020e208d190d6b0e20f'),
-      (126, 70, 38, 32, 17, '5207d350ff08c65378b1f6c4772ff438a1f4639fd0f0ea5da177369ee1ba2d1b'),
-      (127, 71, 39, 32, 18, '781be742bc73c0ec487b2e6deee2e114615d23d460deb15a9acec0c81e096e59'),
-      (128, 8, 40, 6, 32, '71376e498d757bfc02f472c7ae705f5a4a9633b526b38e960c818c2fbfb7e188'),
-      (129, 9, 41, 7, 32, '77d0534dca2b3efcabb300730592f928a7cab4ac2ceaa64344bf7ad42cec8012'),
-      (130, 10, 42, 8, 32, 'b4c1f04dae64f6d3ffa2149a30b3905f0da21e8cad28949ffe3b61642f03559c'),
-      (131, 11, 43, 8, 32, '1ded3b2d3eea1484155bddd702818ce5c59d3103db3c3bdc090d3c0676f5a02e'),
-      (132, 12, 44, 9, 32, '4a033f086b2300750c09a4a6f75462315a91d3b3fe4c53ca4606c6149f76cd38'),
-      (133, 13, 45, 9, 32, '228384ff7337ebff705c07149698053e04f3d9e52c5eef20f7ecb668399c76d2'),
-      (134, 14, 46, 10, 32, '90d757cf57c907bb8deb688c4bc789f90c77807df919d989be05d8f33a2b3a8a'),
-      (135, 15, 47, 10, 32, 'be359d4ab1fdec5f078e87278fb8667454574e49d8343ce58d6da654c7b9d248'),
-      (136, 16, 48, 11, 32, '18190e127090de893fff1c388a159caf2d3b7d98fb811417d475f7cf22a47f46'),
-      (137, 17, 49, 11, 32, '9be4b6ac619d3f73e4bd53c99e40e9dac0c00022ab555d7f77ad3848f10811ac'),
-      (138, 18, 50, 12, 32, '26b7365c44b459065868bd7a4e5f0f95628a9e78d3e862e4b01bebea03638e4f'),
-      (139, 19, 51, 12, 32, 'ce552a7fc86d2f8992844712a25305d8fd69bfd2e020ebd8c319035e8828a4fb'),
-      (140, 20, 52, 12, 32, '0b37583dbb740604b9dc6000eddb9ca465d1e925b5e18ea94e10381d3b6c185f'),
-      (141, 21, 53, 13, 32, 'e3dbd218da8a4d77e590410619068a9b96ab8ef58a1ffdca68a0c18ab3815d96'),
-      (142, 22, 54, 13, 32, '4a3444bbeb990bad1d4c6695cedad4937890b30fe436b391a93fa2e3d861cf42'),
-      (143, 23, 55, 13, 32, 'cde7f89c53f3a625d4d9cdaf604fa22040b8d60cd70c3b94c6f07f5b9f7e5b4f'),
-      (144, 24, 8, 24, 8, 'a110c8c41662ddf0eb9b1845b9fcc7086adc9ff74d5e4ec961d922f09ed7b172'),
-      (145, 25, 9, 25, 9, '0b7fad454cad4eda5942404dbe091196f9c2536e0b892a0cae306320d0f6182f'),
-      (146, 26, 10, 26, 10, '86c155e480a27cc600bcb86d24954504527f69fbc0c10ec66b9480a907ccb3f1'),
-      (147, 27, 11, 27, 11, '4f9a2b7fc751b69d89e6945ffde97f8009f4f16b826200e47fdf95186a9cc90f'),
-      (148, 28, 12, 28, 12, 'a8697684299ab48b64fce7dfeb53774442fcc8512e2a332d744780efc14a1cc9'),
-      (149, 29, 13, 29, 13, 'b373ee0617f28c7b751c27c39cc89b1e18e6ac4719928c3dfed23ab0c8736a2f'),
-      (150, 30, 14, 30, 14, '3d0a86768353b5106ae08e7efd23ea7443af1f2af89ec4460f03b0aec5014c04'),
-      (151, 31, 15, 31, 15, '7b3435a75cb0711872c57d49bf230a04ab0dea68c3c711c7a782df34045efd96'),
-      (152, 32, 16, 32, 16, '31720948eb06ff49503f64c054a08732afe2a5cc0790e54e20227ef5ec35c5d8'),
-      (153, 33, 17, 32, 16, '3800567c7052773c7356696584a8bebc2cb8455ae1d5d318fbf5b5db28c684a5'),
-      (154, 34, 18, 32, 17, '3e34f47fc85c80a84533713f6a7787bee905916dadd5ac5a9c720b31bb607ce1'),
-      (155, 35, 19, 32, 17, '7f0015cbcdebac8f8f0edb41a12eaa50b606bdb8d7c8a1eb48a138c75aee4c91'),
-      (156, 36, 20, 32, 18, '42a851f50d3439944ed8520701069f214222c0776be87db4c4ccdf3d508e7421'),
-      (157, 37, 21, 32, 18, '3fec8b89a81e1aebddc8b069bfc1a80aedd1330ec1b6dbe2bc39bd0a82aeef1a'),
-      (158, 38, 22, 32, 19, 'c63e4de968c807eca41434562c530393dd6c5fcba24b9b0b5755b7230c7ee2d7'),
-      (159, 39, 23, 32, 19, '2f6afd5277a473c458a95320ce165d4002f52efabe7235c389c39c2acfda9a96'),
-      (160, 40, 24, 32, 19, '931c88b87255cf1372b87f88d90d653fe2afa45252698e35e36d82791260426c'),
-      (161, 41, 25, 32, 20, '6171b7c29619f4aeee0e7ac3f912f02fb24407dc1b5658a37c022bdbffa3c9c0'),
-      (162, 42, 26, 32, 20, '41bb2f09b1735af869bbfad6d544bea81dce481d03242285b0581937d1eca6fa'),
-      (163, 43, 27, 32, 20, 'b99bf860d474a2fea5e695de1f22d5abb59735e9ec5c504f5c0331e44cce18df'),
-      (164, 44, 28, 32, 20, 'aacfadcdb1f517c875741c9ad1ca63c8f51d58ebe1c937c4826d496dada392ac'),
-      (165, 45, 29, 32, 21, '48ff17c5a0af8c398596658e1db9b4fee00bb8742155933dce5f7eb6af7845e3'),
-      (166, 46, 30, 32, 21, 'e758d4a795c010dca14b186f4efc70dce4c52a8713647bdfba9ba0fc0617f6bb'),
-      (167, 47, 31, 32, 21, '8ae56f493bbe612f42bfcbc4709f1e181dbfb947066f0bef4c3b8c922d716405'),
-      (168, 48, 32, 32, 21, '53b1a1cf06b51004e76fe74a066c2646c7ab5f9943e1e06680a63dd840f48cd2'),
-      (169, 49, 33, 32, 22, 'bf45906d0ef996b9e1851ec585cf858c20e825a262369f42198c8cc6898ccf5e'),
-      (170, 50, 34, 32, 22, 'e06ddc00baf556e08144d65800c7e2e251a4b7ddcebd9813148c87b4af3d40ed'),
-      (171, 51, 35, 32, 22, '25cdaae5edb2346087b62579c00c60434e0a9568ba5fbbf41a2dfa7a3f69a8c0'),
-      (172, 52, 36, 32, 22, 'c3bdf58d37ca4a9f4b03820c104f1d27645dbf2c2b1218a13f8c1a7e4dc0e1c9'),
-      (173, 53, 37, 32, 22, '0576235577eea42e34aa1b4eb78f5e6717c4b0298eb64100abd3131da68362c1'),
-      (174, 54, 38, 32, 23, 'f2ae4cbfe2719d7e47d562dfe0ca1aa14e4154e2af57d97f9565ec99e4a5faac'),
-      (175, 55, 39, 32, 23, 'f7faa23504086635deec3eb55619963f628b8b4dec8eb9ab216af9d35cfc50da'),
-      (176, 56, 40, 32, 23, 'd653b17a2571b831bb45bd6a0c77eabf7fc8c17aa802c778a0b1a33dcf0e560a'),
-      (177, 57, 41, 32, 23, '90936f62beb5c9436d39cdb1d07a388556f19fd384af79ae61aeb74d9d067858'),
-      (178, 58, 42, 32, 23, '189c22109b1a6d47265a7e16469007627fccf1b357e4d4b2a86c385aff45b070'),
-      (179, 59, 43, 32, 23, '05d24fdee1150277c182fd7227cad2ee3824f63f7870dd76a358e9e33dd7144f'),
-      (180, 60, 44, 32, 23, 'dcbde48fac0198ba30ab0eccc312d8bb6919f195c1f66cdc7269a95c2cca848e'),
-      (181, 61, 45, 32, 24, '4add5c9cb26b29f2bdd643d850315167b2208bb12f1373ce12aadf58d2171d2f'),
-      (182, 62, 46, 32, 24, '6c5b21d0d0cc4367763a38bff62185eaa55a29e4aab212deb67c27b010dcc3ab'),
-      (183, 63, 47, 32, 24, '358e608cac5676e0c2e93b4771c6b4463554d833b5f51f782bafb078264d7600'),
-      (184, 64, 48, 32, 24, '3e99a6bce4ed8e87e99b38089d02b1e995e545336f3c5e5dac51ba409d15b810'),
-      (185, 65, 49, 32, 24, '16bb62e6cdfc0157a27a0a88848c90f69b6a2559078b25ffe0cd90bb3a18b85c'),
-      (186, 66, 50, 32, 24, 'bfd59b8e0b0050711551f23d1ed4a5e0f0990ce3f71537b4c55f4ad87a5d10d7'),
-      (187, 67, 51, 32, 24, '190a9ad55f164609faa47145a25cdd860d2f374868f838a7cb36f6f5d05d1061'),
-      (188, 68, 52, 32, 24, 'b8b260c53efbec02cbb387472378700b8b7dcbe18788f89806fce7a1f7042199'),
-      (189, 69, 53, 32, 25, '584103e996e62d073b74b35d67d015d7dbf81192891e556d224140ba82b8d5a3'),
-      (190, 70, 54, 32, 25, 'e0ad6b34c73de607c56e3cd146608289fd24fdf72190cd0cca9685495028dbdd'),
-      (191, 71, 55, 32, 25, '603ed8d3ba7233910e70534dc75f309b4ddb0bf04b418c2f7597ac26c9fd2c28'),
-      (192, 8, 8, 8, 8, '8366c0de900d98cdf8cd7d0a488af68298065af86a4cab1a221bdf4826a175e0'),
-      (193, 9, 9, 9, 9, '224ae691a4f4927fb0a07f97bcbcff01e43d62bad09ad62e6f8963e1cb53058d'),
-      (194, 10, 10, 10, 10, 'bfefd0dac3573ac98d03705b3561554b540de716643379e8e131ca3756d6f956'),
-      (195, 11, 11, 11, 11, 'c3ff2d819eecac4fd0737cd7dd417931675a12a0c665f04bbf5d99166d06d288'),
-      (196, 12, 12, 12, 12, 'f095ceaa3f6058c010c6d6a1f9a684bb879e064beecbb77c0e96db950919b816'),
-      (197, 13, 13, 13, 13, '88b2e8b6635a571c35c59eea8c4f91cf04c0198436a74f55aa61de9152e840c1'),
-      (198, 14, 14, 14, 14, '0f33e261f7098c3edfafaefcbdfbcb7effc9ca561bc2d2531a0467c4fb60351a'),
-      (199, 15, 15, 15, 15, 'efde6c76183e1b8cd5590ca2f6cd5ecca52cc7d450fe418ab9b2c249dbe27c8d'),
-      (200, 16, 16, 16, 16, 'a77eec02c52ec66f0bed7602929d4434bc3b73567a4347702b5ad2abfe03ee1b'),
-      (201, 17, 17, 17, 17, 'ea6ff45fbf9019de97fa594a250516e9d5b1a24f2993b4829e7145b367ebb871'),
-      (202, 18, 18, 18, 18, '6cc11974bc9da4ace790afad71db5653197fa08cc6adac8d6aa70fbfbc0a0868'),
-      (203, 19, 19, 19, 19, '3c3a2921629eaa7e951cfea66c5af6d68a7d203fc2a005a4ac472041a80fbae5'),
-      (204, 20, 20, 20, 20, 'bc450458d5e0ee9a67c954ef470fc24e00572c0a5c46cde5d2659b0c18ed9451'),
-      (205, 21, 21, 21, 21, '56bc261864bfd6d5eb434d0f59ade45da54eb5482c98f9e7dba17a539d568603'),
-      (206, 22, 22, 22, 22, '420ffc7d8dadd019f33f6307bfa4cec0538350f2437bfc96a11f3d5555217acd'),
-      (207, 23, 23, 23, 23, 'a717c2227102b267098c457c0c4a2a4b62934eeaa0a3335682454da92975c15c'),
-      (208, 24, 24, 24, 24, '697f9ed14e904a03beb9285db4ba32ba0aacf522cac3e35ffc4d80667641baf5'),
-      (209, 25, 25, 25, 25, 'b8ed790461eb42e8289f781ff26832efb827e504de2c84bf7dd054b442da88d5'),
-      (210, 26, 26, 26, 26, '16a0664ec48302d2e9745f732dedab62ef8a8237213d48a20bf1f17cc2ba27fc'),
-      (211, 27, 27, 27, 27, '153ca7f4e965b817c03c0471a271efb9eae05b29a04503c5cdac7797f1dd35cf'),
-      (212, 28, 28, 28, 28, '8d4ae5b239d3d4f3162fb618cd1e7879b79b5624fe5142a98626286a20aecdff'),
-      (213, 29, 29, 29, 29, '2e9860aabc1ed87fea65512fffeb01c7c36cd158bde65a8f2293ef629972b3a5'),
-      (214, 30, 30, 30, 30, 'b5de456010eb4950c1c3cfb0ee36625669a0531a534b237a5aaf9cd3749db6b5'),
-      (215, 31, 31, 31, 31, 'f15a7ce0f622861f399d5b01376ae30a17e471c7bab30457561a756608d31c9a'),
-      (216, 32, 32, 32, 32, 'c98c12d46ce57e18282aa5ab7611f8e9bc4918bbc734021a3cb46acda2f0325a'),
-      (217, 33, 33, 32, 32, '99edc27b973d6058080bc74cfe8c2c27981a43f8ff4fcb9382715427662f5212'),
-      (218, 34, 34, 32, 32, '4d7b3995c800f5b49c7c970a0a91af4a48b0f27986d7a674dc9d3528a83abc89'),
-      (219, 35, 35, 32, 32, '2ae2656e200d206e227f41b35cb0a540a8556d22e8ac782559b2401745997594'),
-      (220, 36, 36, 32, 32, '66f8900b438c0df6250595f9e81eb5e35e8b7e429fdd624eb903ec90b1699bad'),
-      (221, 37, 37, 32, 32, 'bfe4794ef7e4a05feab8b3f79d0e89310e29b0a61630bae588976e9b0f35be53'),
-      (222, 38, 38, 32, 32, 'a23604f694cb9b86ae4fcad7e58d6e10635084094a43986e55dab32f23e4b8ff'),
-      (223, 39, 39, 32, 32, '8d4af05a9a6a373252db6e74a8f22e4ca8f9a4898715afc901c491434198de9f'),
-      (224, 40, 40, 32, 32, '0c55eeba48c56baaafc43db686b1e3ab16a806af619e52f7c83837456e12af98'),
-      (225, 41, 41, 32, 32, '4aaa1f773e2e377095decd269089c5caf2b455ae5d17fb8fbf0eb7d51a886afb'),
-      (226, 42, 42, 32, 32, '87f3393404469a0e378ded7038e0bcef641972d86893ec07db2008718fc7f5bc'),
-      (227, 43, 43, 32, 32, '97aa8d19d4ecac97b6cde047a5c54c2935f851c03a24bc9cdd73043bebb174eb'),
-      (228, 44, 44, 32, 32, '000bd568f6f7b59f1bdff78c7220d9d4682a32acada26db5837286132bf5dc3a'),
-      (229, 45, 45, 32, 32, '6b7b9c8232bcde187af36aba8019a14e2b4b0e55aea17362edf8782ebbd174d6'),
-      (230, 46, 46, 32, 32, '25f57e3dfe1a73634c6643bc398d4fd41fc0a9eeaec4b0ffc16fd03331babd01'),
-      (231, 47, 47, 32, 32, 'fdfcb0ba062d0b9f5b789e89167e1f2eac77a676c3e937b11fe1ee36c8088624'),
-      (232, 48, 48, 32, 32, '0f2211d923da64a7c8b6772052da5588809f41dfc7a37e729fdc6ca8c6a30139'),
-      (233, 49, 49, 32, 32, 'c0a4f2686e89f65c65e93c2e500c2a6591f5d71bc0411c671067c706f6c71da1'),
-      (234, 50, 50, 32, 32, '10a47ad5462e1aae03129ea1971fa50eb6d483f78e6da241b7a19450ca162156'),
-      (235, 51, 51, 32, 32, 'b774c2bc55a2c1e21d519f39f2febcbe4d13ecada93e74e9c62249ae638f1235'),
-      (236, 52, 52, 32, 32, 'bfee280306df6cf519e5d876e3baae1a38ee6ee450474583b9013126844f21f0'),
-      (237, 53, 53, 32, 32, 'c1aab6d15cd375c0565c0c90b0f82ba663d6dc9094e156119413d65afd5cf6fc'),
-      (238, 54, 54, 32, 32, '57aa0e84c98f9478929afa5ff5452262fde02dfb5c0eeb70c55041e1bdb3d80e'),
-      (239, 55, 55, 32, 32, '3a8eaabc6e686a86b8b78a92ffcabba3eabe81a42e0b460879c0f7b153d1baf9'),
-      (240, 56, 8, 32, 5, 'dd908a6b216833c7ff4b66134e7465966bf60e331b7d97ece26946effe3d897f'),
-      (241, 57, 9, 32, 5, '516849cbb88d75c60ebbae88a9c14bef6257bc589d04e2d01adfb0c7b3c26cf4'),
-      (242, 58, 10, 32, 6, '5ce9cc7389ef04a86a562ae904c2f42c8d287561a89f217e4e483542411d0bbf'),
-      (243, 59, 11, 32, 6, '6c544f20d37526f85e88991f15b9cd49229d66b73b831732db1bb21b89c69f39'),
-      (244, 60, 12, 32, 6, '0e40e6f649ad57ca5f5f4d513d64af0574cf1c88d7a69526d92482d2f8ee6588'),
-      (245, 61, 13, 32, 7, 'a9dba42ba736113543494848d5cb3acafc3b2a71e211b8b032c7bfdc134c7b57'),
-      (246, 62, 14, 32, 7, 'fec633d9f011e5bf967b73a3416e335504f838aca8815fd7b9bc26caec37bca8'),
-      (247, 63, 15, 32, 8, '65461d91fa97d0ea3c110ecef580b419d127e4d928b306a077610b0cad7e8e6e'),
-      (248, 64, 16, 32, 8, 'cf848268872ffd3d34cdaea2a564d7d1c1035c9e707fe1c31e62ad2c104101d8'),
-      (249, 65, 17, 32, 8, 'c09b74f6b69d75aa6c7dcb456a4d3660d9ff88c12acfa2b0582ab38a6e4c95cb'),
-      (250, 66, 18, 32, 9, '440438c730392be6ac3e2e9ef71f169605d100b8d3f00429e7f88b8a7a414af8'),
-      (251, 67, 19, 32, 9, 'fa1dc425bdec9c34c7ceb82251a978c5f1ec71d2b70f0419a81ec881af131d54'),
-      (252, 68, 20, 32, 9, 'eda897d462828c734d28df8c7c64696f4b01472a18fb4284a1cfed5053653ddc'),
-      (253, 69, 21, 32, 10, '26df16e1a5da259f1f6bc44ee4bf0e75af361984285139daee96eb8202c114c4'),
-      (254, 70, 22, 32, 10, 'bdd77bb8bc59c8f451e15b6b02a1ed6b0a073810bf2de3d40222097860622bb4'),
-      (255, 71, 23, 32, 10, '331d40552d5ee57939a69af92c0b9e2970ce644aae2a57ebd49400bab48bb832'),
-      (256, 8, 24, 8, 24, 'b586a88623dbb00754d06c51aa07476843a23e3f9c5edc5768c7fab206fc2872'),
-      (257, 9, 25, 9, 25, '21c6c8cd0a0310cb8048754c36a45e93b93e878a8bc91ed7889a2951597e6ff2'),
-      (258, 10, 26, 10, 26, 'c910fcb4d5d2ec7311d47a1d69d08dcff9edb48bb29d1ee315e985f034724e05'),
-      (259, 11, 27, 11, 27, '47ef70774ca4e09342dd18051323e8368ff57692f00a0e7bea14a126927e3639'),
-      (260, 12, 28, 12, 28, '0f2ca7ea645d3150706ad14a00647f3296424664d88c5cb14624800082c4fb18'),
-      (261, 13, 29, 13, 29, '0d219c263fb74a639d78c7a9144770bbcb2f8340032ddfe9b378746678b3b4f3'),
-      (262, 14, 30, 14, 30, '7933bf54585ad427d8e2b2817d79f02edbdf0a5906459a4806a9c439582c39fb'),
-      (263, 15, 31, 15, 31, '098ba5e079a8a3b9f36f4509d06b65750f36ffffe66d801fe6b3212e9a9ccd51'),
-      (264, 16, 32, 16, 32, '4b1b28c21b4b3ae4f2f55d3b47438568874d6ca18c3f3d67384cfa73e345a69d'),
-      (265, 17, 33, 16, 32, '293eb20c2bca7eb689abed5aa18d707c776818b61b1981c013f2c80b404be079'),
-      (266, 18, 34, 17, 32, 'ff9efa69e1be4b05d541f256c40281580065d60b5a0ec45969385875a1551b3e'),
-      (267, 19, 35, 17, 32, 'f146c6d62475e67c5cb3ceb1372cd935406534ef1742ee67a1b16712b3f18718'),
-      (268, 20, 36, 18, 32, 'c3ebf054dc6c000b961a6f024428e0f845e4059e6ac82893091d618ac7c8680a'),
-      (269, 21, 37, 18, 32, '46f7133e968a3231aaaf81e734f124f0498bd29349952982e82a6dca544e9a0a'),
-      (270, 22, 38, 19, 32, '761b69419159114d4ecdcd61ea7b9f7ffc193f5276c1d7ca0c04e5811955407c'),
-      (271, 23, 39, 19, 32, '5e8886ce7c1df0946be0c34889ecbbeac4e2447e289f5e5975bf56e75de32497'),
-      (272, 24, 40, 19, 32, 'fab3f439bc80678e277a0b9eb9814b50f8058622b671f779212b3388dceec2b1'),
-      (273, 25, 41, 20, 32, 'e1fc316d20b9a383fd515b819e1edd821de4c1d192a6781090013ec4e0744120'),
-      (274, 26, 42, 20, 32, 'b3d468230abd9e9503b816453fe2ef11671ddf5b3d555a9220d4b96a9c13d333'),
-      (275, 27, 43, 20, 32, '9171272b0ad83eca70fdef5499d4d960369272dffd4ff182c25bbfec33cda98c'),
-      (276, 28, 44, 20, 32, 'ea0e7035dff8435ce2063f13f8724303b1714fc8a45441cca15857c7df66bab7'),
-      (277, 29, 45, 21, 32, '2d04af019a6d5214e2920e97459de664929375b5881ace58880ce6fe2c0c9310'),
-      (278, 30, 46, 21, 32, 'ba3e18614528c2f431024a114064b98a1e4c10f02948dd6d8dcf8f03cb56c70e'),
-      (279, 31, 47, 21, 32, 'f72f6026281724e7785a0039a5f8fe0133990c4c788c4304b82922f840149aa6'),
-      (280, 32, 48, 21, 32, '685d50fa8257f5d25d6130989908e976e772f625e1812130ead09113199cb5f7'),
-      (281, 33, 49, 22, 32, '90f88096a4ef5077addc1b53152737cf0be5525001d8ed545f50619f8da2c156'),
-      (282, 34, 50, 22, 32, '1ff394bf7d9a7237f4fc5fc0fc8ad7bdbbff2d8d2a92968e3d1e9913de121486'),
-      (283, 35, 51, 22, 32, '89e38bd5f54636fecf2a6958df3a58f7fad2310d6869fa03e319bdaafd3fffda'),
-      (284, 36, 52, 22, 32, '86a3e48c0cf6e160f074505a909f43845aed236b9c552ae52f19de9d7b909699'),
-      (285, 37, 53, 22, 32, 'fe68b9a58c769d678d6b86a1d4229bc2a196735ee8346212890461da032c37e6'),
-      (286, 38, 54, 23, 32, '1adecd9962cdb0f5cc7d38b88a9a2b1f7dd10b677f680b6d274ca84d4a5b0e8d'),
-      (287, 39, 55, 23, 32, 'b92fb28b22a2a2ac8f19c93033afdf9461beed653bbff5cf44913ad530cabfca'),
-      (288, 40, 8, 32, 6, 'ef31b352ac5ac91c7202ce25d0c6aa3b209bc5f62e302e6aea69d0dfd6337ecf'),
-      (289, 41, 9, 32, 7, '1903394281954bb998edeaa0010ec2794e075a7aa4c4de43801267515922f29e'),
-      (290, 42, 10, 32, 8, 'ead5012984edd28bde884a0d0473af34777e7cdbf4d419b676e1e23cc75d2cdd'),
-      (291, 43, 11, 32, 8, '6ddcc74c48ed620e718290a0dac97a0cce6109edd76ec6a5dde1235ccdd39857'),
-      (292, 44, 12, 32, 9, '80ad2a01c5bcaaa67f50a83ca0f851e26121bb27826d22329b30661652a8080e'),
-      (293, 45, 13, 32, 9, '41f858429339a859a9610d4bee766789513b688af2a3710f872b5df1864c76bf'),
-      (294, 46, 14, 32, 10, 'edfd146544956724cf1df0ab7740f9a15595e2626ee05372d204d66cc9b065aa'),
-      (295, 47, 15, 32, 10, 'ab0a7bce94281a114e0802b12c0231b21d43b046722ac33d327db8d69ba68817'),
-      (296, 48, 16, 32, 11, 'cbbe19c6e47c3bf5cac60903c48dec23b6254ef3b1e12ecd86498ba821722dc9'),
-      (297, 49, 17, 32, 11, '10e4b0347815a4ac64de3546e4c94603a9caf180f4f9dccac830d60b3686aefc'),
-      (298, 50, 18, 32, 12, '91e84f24cc6cc957ba87d6628ca1e974832799a90536b859cfc97b6264621fdc'),
-      (299, 51, 19, 32, 12, '773aa4ff4d84579f406d0053943f57f14124c9459c18a09e462edb6fa6285583'),
-      (300, 52, 20, 32, 12, 'a9bb576972b00897b29ed517242a49a1cd799b260f955e5079213becf247eabf'),
-      (301, 53, 21, 32, 13, '50f06d43b2d11da3c25069b5495731b86be2c47e09a2975ffae36f0d354b3130'),
-      (302, 54, 22, 32, 13, '3380f5cdb13a86dbf9e74478099f7e02c9093c7efff8506fecc66a9be1c91d0f'),
-      (303, 55, 23, 32, 13, 'd2f9af13a430d1cebd51c0fdf1701377da587d72803b917061480187ff39fd25'),
-      (304, 56, 24, 32, 14, '1356d4736ebc87700589a18f186aeb82f7d6bae2da2fcbcad85bcc83223d85d7'),
-      (305, 57, 25, 32, 14, '39df5e325f3c35234e5e284b44d9f8b65c70ca083809b22364a36c77f4264786'),
-      (306, 58, 26, 32, 14, '2b7798bef8ace69b623b8c25b244a9438c49e37639a4d17fc3ca2014cf6ef8c7'),
-      (307, 59, 27, 32, 15, '8968d6f63a56200a447f71ba45388a01adc8e87a9a54f0245441dbe9f70a56b3'),
-      (308, 60, 28, 32, 15, 'bace37d2bdd033f4ac88d889fd0c7202e1bfb78dba77c1bdefca22b04c881853'),
-      (309, 61, 29, 32, 15, '78baa350bcdb0dab8376da31f2b2b103aa4c2e1e34dcb2abdcd9e0c162464c9c'),
-      (310, 62, 30, 32, 15, 'c5d8e7f774495992994813ce1cdd4e849845fe415d40cf7be55c363cf96a2f9c'),
-      (311, 63, 31, 32, 16, 'db52283b213c44425582c18bac99520d9d175c236f5ce2cf3bd4a5feea9946c0'),
-      (312, 64, 32, 32, 16, 'f03d40f4e71d8ff7d96d91c1ee51e0c5e7b66965610d9fc803ca5451edd0915f'),
-      (313, 65, 33, 32, 16, 'b7b1e4ef8acc5046fc26642280a2050e255e6e2d88756979634d9bf4641aa3c2'),
-      (314, 66, 34, 32, 16, '08b0bbdc068ff3cb6c3f53d2106e03395bf26850ff2eb6f52a6572f6fbff0d37'),
-      (315, 67, 35, 32, 17, '469271c8711af1d894eeb07f0645f6e4fa82f975a9c5f80879ca6dc17ffb46be'),
-      (316, 68, 36, 32, 17, 'c792107dc0b0233353468703180f4ab3649d4d7cca91e060e39f21675b5c28d3'),
-      (317, 69, 37, 32, 17, '7e5f8bdefc5a13f8511cd001ec86aa2cf72234b6ab43361bde9766a02de84e83'),
-      (318, 70, 38, 32, 17, '4358bebca0d218f2c82e9a3e704f89c7e54aabfd3ef3a21c8d6384cf40d3a2b2'),
-      (319, 71, 39, 32, 18, 'de05ef67920667df386646c3ae2e75a5b16fbc08eded30ef13c3f14a1002a8a3'),
-      (320, 8, 40, 6, 32, 'a6ef8c46e2507c02ca638d12d5953a670ac20b5b2084841d53494214ed4da0fa'),
-      (321, 9, 41, 7, 32, '10f5039b06c37106f0da16d9d1bd66c1ac717c8cd18db9f5bc8f75650c16db32'),
-      (322, 10, 42, 8, 32, '7aff5ecd41f8651084c800ff825ae6ae112a53dda2fd265e985c4b7c42cfb04b'),
-      (323, 11, 43, 8, 32, '15f059e70017f92689004d40f2e81cbbdaf6c23a472527cf86f8888f8ecfcee5'),
-      (324, 12, 44, 9, 32, '19a8dd0818753cdde87836540dd0368eca68bd2a3013d517ea5c72aaca0d32ee'),
-      (325, 13, 45, 9, 32, '9c2a3cbf084581def33eb2213135d84b7b801de106590f289a2ba5339c26dd15'),
-      (326, 14, 46, 10, 32, 'd7e9285e61948ad1ef3f105d44c2aab2af6879723c860d5ba48089a55882cea7'),
-      (327, 15, 47, 10, 32, 'd9acbb9ca65e83bcbfbdb8f5a2c1592778f0527de6da8db12a10b85e3f0f3e2a'),
-      (328, 16, 48, 11, 32, '686de7ddc99d67e12c1d6b86a15195b281a172b78bc5df4ce8077454cbb136e0'),
-      (329, 17, 49, 11, 32, 'c6766c080a03be31d8b64a8e1dcf9c1191b21499dcf5aa1aa92bc9f460201d52'),
-      (330, 18, 50, 12, 32, '398578deaeed2bf6a4c6f9ab190ccbd87b44b4c9c81ca1346837c1a531fe4e2a'),
-      (331, 19, 51, 12, 32, 'e02cba707b746943a720fc2cd86ffd9fb81c928e07b4f409d6ea6674ef05ebc6'),
-      (332, 20, 52, 12, 32, '09d432968821c8a13f04ec6eddd875e5fef4ddbc80476ee2d4964a57d75aa608'),
-      (333, 21, 53, 13, 32, '5ed4bf0bdfff3476ef61c1b0d51005be14b7ee0c4834bf94ae97632708067e41'),
-      (334, 22, 54, 13, 32, '0ab82765b782ab7efe31f2e66d38e78a445d4be857b43d7a31da7a748efa261c'),
-      (335, 23, 55, 13, 32, 'db4ca56f096f798c44c5aff68d8bf994e30a3e8a125a5691b98b991f480dc9fd'),
-      (336, 24, 8, 24, 8, '4b077255b7c71857ded91e8a73be02b9c399247e9f78e2dd631abddb6f237278'),
-      (337, 25, 9, 25, 9, '63e3a77fe40c6e7ba9f837c04922dc59f1498d6989aae708bf693f49e8796e5d'),
-      (338, 26, 10, 26, 10, 'd84d379e4218355023f4f1bd15bc45a0a0cd3b47b9579538b07feecc10f5220e'),
-      (339, 27, 11, 27, 11, '97e55a11d9a590a95a9aee871e8f33bf8b5d1dcdfe8bb362b5ca8bc3bea87a13'),
-      (340, 28, 12, 28, 12, 'dffc7105a7d3606d6afdcbd742d9228ec9f404aef47a2b52c4872a39c6556300'),
-      (341, 29, 13, 29, 13, '15cd9a8bc196c321693224ae4b5166b1c4814a25ca9217ebb7f8795446b3bdd0'),
-      (342, 30, 14, 30, 14, '42e9adf67c4f242e7922f62fd3355cb0da60f1cfb6d157736c7cf5afb5212c92'),
-      (343, 31, 15, 31, 15, 'ec78a2ec1290167dd24718b63ed4a562392e1a3405899a637ad5449282ae149b'),
-      (344, 32, 16, 32, 16, '0045fea1bfafeb0c99cc212b2fec50a0c88f734e35d558b20c40b1f3250b9773'),
-      (345, 33, 17, 32, 16, '3e3937baa5b60062b57bd2df63e3118c8bc4bd1f8f92fca8bd00b360156a4ec8'),
-      (346, 34, 18, 32, 17, '6a02e83af0960c71b3e23cc5dd38bbfc53788e4e0faeb51a7b299c926d323f30'),
-      (347, 35, 19, 32, 17, 'bb26b0e227b0990972e4bbb6b39da81a72687034fdfd61c09352d25503b21f84'),
-      (348, 36, 20, 32, 18, '824c1cf841898fff7be06b04ce27c161cb8cc95a98623f5e34d5d81f97baa6f3'),
-      (349, 37, 21, 32, 18, 'b2fc68f8849df7d987568b98882b6386ff4334eb536a7f4424cb63f44d58d08c'),
-      (350, 38, 22, 32, 19, '0500c9abfbe8fc3b9b4c4a198c669641f5808797adbfc2adcd8bd0c685aea66b'),
-      (351, 39, 23, 32, 19, '94d9e3bb76976b89dd73d246d8c9b9e2a10bac12fac6db958f24e3ea4674d7e7'),
-      (352, 40, 24, 32, 19, '1aa067ec0ca2698f58a3e48cd8a2e7d83bbbb29f8b7ec4367a4da01102a13016'),
-      (353, 41, 25, 32, 20, '7d1bb66971dcb8b407cdf025b2c58f34384068af1f3feff3f95a9e8068a71c97'),
-      (354, 42, 26, 32, 20, 'bed8b512ce551f1bcc59c2b4080b5e2a5e1bf56d7dabb8b8db8d2d09d4c436be'),
-      (355, 43, 27, 32, 20, '837b0ab9270ac8446eaa6e8a3aaa20af32bff057e21c3dbf32f441068fe7f46e'),
-      (356, 44, 28, 32, 20, '114abc3e13bfa6568f0e7e1826fed014691ca756c2323cb742edeaad00834505'),
-      (357, 45, 29, 32, 21, '128d176054ad54a51fd8bdccb6d2c393bb1b28e5d54123e4938f4eab0f4ba0f6'),
-      (358, 46, 30, 32, 21, '04bc87470e45ca05a87f1487b0d0bc4ece287bd949c6c0e11a12922b9c8c169e'),
-      (359, 47, 31, 32, 21, '1a55bf48e9dd3648b4c92f2e2871a832a62bbf65704a14f2e71446849435d23b'),
-      (360, 48, 32, 32, 21, '477e3e63f0bf601a89052884126eb776887be4e4a22fbcb4cd3100b2a278baf8'),
-      (361, 49, 33, 32, 22, 'e0a0fd19562dd7f8b4db20842b28efbf148db3aea686366de2214bdc47db3313'),
-      (362, 50, 34, 32, 22, '52bad392a87fe225b06bc7aee5598bd1bf789adf61d913a42d8c1c5c6a7e3509'),
-      (363, 51, 35, 32, 22, 'e7069114c28388e79e1fbdeeb43d15b9452d0108770f65fd2ee8a23b0a413bbd'),
-      (364, 52, 36, 32, 22, '0cae2bdd7ecf3044b5b4bf77a0819360426dfbfdf745aa7a0307da55dba3730e'),
-      (365, 53, 37, 32, 22, '777f1412750ab4620c0545ba8540ddc36f62919287708aedf518205caeec0639'),
-      (366, 54, 38, 32, 23, '66b70c88c7946364957430189c13d8f848a1c6a09bc3fcfe5bbefb13fd731ba9'),
-      (367, 55, 39, 32, 23, '58d53bb732b06f41fbb621b52a2fd7ff449cfffc92a0bb0fff0d48594d020334'),
-      (368, 56, 40, 32, 23, 'f7eb3c4cf0b4b6e1e47eec5068f0c7fa168db7d35d311d2dcb2e3fb637e17611'),
-      (369, 57, 41, 32, 23, 'f461783a22b96b09932f1c7bca7ccc21dd462dc276e0edc2c5ae69582e5ceea3'),
-      (370, 58, 42, 32, 23, '8ae63d4c0f2a07e527966b5679b7d91e6655e1798c68fafea1b8a4e6df827b2b'),
-      (371, 59, 43, 32, 23, 'af0fa53f9fcdcb92081b401fbfc0553c24b64d7e594a6864961a9538a685cc10'),
-      (372, 60, 44, 32, 23, '2b75354881536952ea68f23c313394ff669d6c8494cd06b6f99671570881aeff'),
-      (373, 61, 45, 32, 24, '44a36ae49d1487495c021f11788a0ce2e089347e6e9f95b13a47a52e384e37b6'),
-      (374, 62, 46, 32, 24, '62c3be702f90247826d031e462c0165040ac8a42123f0c2d7615a389e511a8da'),
-      (375, 63, 47, 32, 24, '94d3096935953ec3f2b030713c4cc68810c91fbf3d59bcdf89f341fb1ee66301'),
-      (376, 64, 48, 32, 24, '342c467ba1ccbc46f199de3f6a20d199c39e209fef19797df770dca39785f44b'),
-      (377, 65, 49, 32, 24, 'a5dc2b818f542940b0b9a00ccbf8560b8401346bc5a464c80c1264d5e7cea41b'),
-      (378, 66, 50, 32, 24, '3fea8b587fa58df6b55579580850f537ef4d1fdf1847525b88125eddf2404a04'),
-      (379, 67, 51, 32, 24, 'bcd9b92a887eff70f45d51b26199c944869ef003a175913642deda0c78fb11ed'),
-      (380, 68, 52, 32, 24, 'c2d2ff0a2c5a5e774585134af7643d0f1980110ae5388bee93edeebc0562e257'),
-      (381, 69, 53, 32, 25, 'c1b881ece51845a2b64fb029b720fa6f274b8f8288b7cbe79285fb7b77ed83d1'),
-      (382, 70, 54, 32, 25, 'a88bd8096be4fbe1c28c26faa5dd3bf940572c37336848cceb0ee18ae698c353'),
-      (383, 71, 55, 32, 25, 'd06153759d6f17ab5cab7ac8a9582303b7d23ceb4423d81f3a9f21781798bfec'),
-      (384, 8, 8, 8, 8, 'bb625b0296e56dc4549ea5111f82c04f11e6f489c4c4dd18696995c3c6ede184'),
-      (385, 9, 9, 9, 9, '1a6f80a6a0f1d16608f7453d54e7df78980694a791eb96b521498adbdb87c676'),
-      (386, 10, 10, 10, 10, '12e47c90f81ad3628a2a5021137590e05b32490858eaad0ecc041773c3277587'),
-      (387, 11, 11, 11, 11, '591a337ee7d3a8a1d0223b73ac4187b20f887cebe334b38b304166d32fd23a19'),
-      (388, 12, 12, 12, 12, '2d51f269fb9a39960924f15c96f4a36901c01da1fbe3aaa9fc940e08ed8a5b6b'),
-      (389, 13, 13, 13, 13, '095f4a0f90b7261270e34c7eb9b7084e27e514cf6afb414fecad2e5261e4f5b9'),
-      (390, 14, 14, 14, 14, 'd841dd589203e6b5699e984ebedf6b64f65825befcbc9ade10f90e87cc8a1cce'),
-      (391, 15, 15, 15, 15, 'ea66d1bf2fa9c5ed6a5401f8e78b0c8a8a0fefbd4936b8bdf9760b135faf47b7'),
-      (392, 16, 16, 16, 16, '581ff1757f579f45be66d4066eccf853dc22b55394b0cfa946e34d307b73ec3a'),
-      (393, 17, 17, 17, 17, '55b3d9a65556d2f3a372a726559ceff071aa1e913ebfa4642c3753d39d8d5181'),
-      (394, 18, 18, 18, 18, 'a48fa1eb132c1cda528cad3f10276b712c9b579d94f5cbdf5d6c55ab8ffc3361'),
-      (395, 19, 19, 19, 19, 'fff70ade8d3550aefa1a5320c858119fcdb980230dfb4b7e38d29322ea00e859'),
-      (396, 20, 20, 20, 20, '36fa4fd8d91cb265f7b38f933d76167b0e0f90039ec762e247671c3b6fdc26be'),
-      (397, 21, 21, 21, 21, 'f05bf7b10d88e95fec4cb803097d9b7b30ca283e7b1e2f0882d8296679e54fb9'),
-      (398, 22, 22, 22, 22, '153614492c7e1a5fdc237c9b311b38965288206b58957d76e134c05d2d376e12'),
-      (399, 23, 23, 23, 23, 'f7ffacb12c96ae68ce6d4b988cefa941f7bffaae0e4438017bb90ea734f6099f'),
-      (400, 24, 24, 24, 24, '81ccd45fdf0365d62607deb16294ad1e2c1b5abccc47e5af164073650f3a2f7f'),
-      (401, 25, 25, 25, 25, '2b20ccf8124bc6a0ce7f4dfb04ffb0f96f4d1d7dfd8c2fc6d615859d707044f3'),
-      (402, 26, 26, 26, 26, 'e1fb118f0bcc57bc28243919f28ab17136a3a0d7422a5c07f555281b0aefdfc3'),
-      (403, 27, 27, 27, 27, 'd41e80902e45b9724113a50388b3ca8a44b58b68a81e48865543a9c6c9fb7dea'),
-      (404, 28, 28, 28, 28, '03c84c2adc391af1fc25b0a068caf097dc1cce2e613df791be7181e74fd58de7'),
-      (405, 29, 29, 29, 29, '56ef836396c64e9ddc52ac318dad91d70f062c52ecf0fa04323fbbafbe6d7e44'),
-      (406, 30, 30, 30, 30, '72b2efd735280a91ee5aae5bc78fdbe2765656cc6e717c488ca68f48cca80888'),
-      (407, 31, 31, 31, 31, 'c746e8842dbb970157447ef45ccfbc35245e7bc22e619cc307274c5bc1b31872'),
-      (408, 32, 32, 32, 32, 'c12539776bb845a74176f9d51c3eaa9694234831d50dac91425a837d3fadfde1'),
-      (409, 33, 33, 32, 32, 'ecc7b939eaa6a04d0d9863910f5243be6d3f8a2adc2ed9f2e04ac5b3a87adb33'),
-      (410, 34, 34, 32, 32, 'a6f1e682df451c80d20623d454ad98cbc3556ca5b2ca524f4bae84788cbff82e'),
-      (411, 35, 35, 32, 32, '2642576e9fd15836984376bff3504c9e8623d7f8aac259e22f6a8124c918346a'),
-      (412, 36, 36, 32, 32, 'e49355efe3f92f474e9ae8aaa24e372fa64b9616d36cb969a3d8867eea58269c'),
-      (413, 37, 37, 32, 32, '1eb5a84df45336e8c252b98c3f2e2636f432bec3cc393582fb283671e2b7c9b5'),
-      (414, 38, 38, 32, 32, '70703020da272f8e7a4fe9d306083d5595651a7bd22e84ec7eeab10804e3fbfc'),
-      (415, 39, 39, 32, 32, '9aee66d0def4ff52fe8dcf06c1c5eb7b658cd10ea48cc715ef25ab2b0587a0ab'),
-      (416, 40, 40, 32, 32, 'e8305220857fb614c0e95ca803a1fd36f6e03b536455d6462cd06e24d84d97c3'),
-      (417, 41, 41, 32, 32, '0021ee73c2982bb6da21f8ff7e008c54906d7dbce5efaa20e3a95c930c53ace3'),
-      (418, 42, 42, 32, 32, '53d03339f6eae8557fa6a1a8fe47b9b956393af5a38d1d50c5e600af9dbffa6d'),
-      (419, 43, 43, 32, 32, 'd5b8d21e4d15b641fd8e7220ae19a282427ff4d6883a2f42812ef01289179a33'),
-      (420, 44, 44, 32, 32, '2be10bc024bd59461a4bc5f377d1795e910ebff8210675a4c874a9aaf1a61316'),
-      (421, 45, 45, 32, 32, '259be56dbebd293f409d024c036cce384c7dd2601e4794f49d9a0115595f7e80'),
-      (422, 46, 46, 32, 32, 'be12f47a31b51987d35f40f1f0366b11d0e4da8fe79232425774eb3e73cf8bbf'),
-      (423, 47, 47, 32, 32, '74a662aef3eaf7c0f1290bde0ae02455a1c793f8f8d60ebac7d0668e1e3b5018'),
-      (424, 48, 48, 32, 32, '463af11e54f39611940bbc5ea2a5f1468087540eea0a3bd2130895f1737d5aee'),
-      (425, 49, 49, 32, 32, '2caf0cf921334b183fe5e0737d787c12f6788a8a358efb6abae31fb1515c3445'),
-      (426, 50, 50, 32, 32, 'c79f35f7bc753605dbb76db41224b7fbf69606cfeb5e8daa6fe8f3d57b937b87'),
-      (427, 51, 51, 32, 32, '45d8b2ec2e227fbd9ef4eaf4e7610a83b26614826e25e6dd42e11904148a027e'),
-      (428, 52, 52, 32, 32, '61b0ebd9f85ac270eb6c97a70690c35b38cd901b13488198853da5e4c12ed575'),
-      (429, 53, 53, 32, 32, 'ca55082ad10f1cf5c027cc7f3851e45ab726a55cbd906bc712120a03bc368658'),
-      (430, 54, 54, 32, 32, '82987d91d170246b51028c9cd09af73a102021bcb942ccf390ef472c2919360c'),
-      (431, 55, 55, 32, 32, '8f6a581aca765b20e3d21f3d31a34c1d513bf85cdd81792af53c0cebe2d0c1b0'),
-      (432, 56, 8, 32, 5, 'dfaa717ab0da6c857804ae2d6ea9269242cd5446655827d815e1d16fd43366f0'),
-      (433, 57, 9, 32, 5, '74f2896d736c33f6a5aa81fa06d602c7925c3ed050d7470f6d2b8db170f68cd4'),
-      (434, 58, 10, 32, 6, '129f134e0694145f376cbb3dfd498d9b1b10715944da9085390129ea798c5d4b'),
-      (435, 59, 11, 32, 6, '77342f7775eb70db0b0dfabe36e25aae0721f7f6bae1d1108ef5a0247354f263'),
-      (436, 60, 12, 32, 6, 'e964fb9f22d8c637997da2a126b94b9d186c0439290301b8bc6c466443d499fb'),
-      (437, 61, 13, 32, 7, 'ef0a4df33a4af041ee3be1bd84c417497002a8bed8c6ead205dd622b5a1d1678'),
-      (438, 62, 14, 32, 7, 'fb6759f8c9b6ca36040d973a8b0cbb6e8be02e486f4958b5b10190403ddc3388'),
-      (439, 63, 15, 32, 8, 'e7827e7972d4f83ffff5eb112c006710472bbb1c92f66194c48ffee2a31925f0'),
-      (440, 64, 16, 32, 8, 'b719f7a1776fdc7ce95ed8a34867e932dc73666961be83c5d7e6ee0fc7fd37a1'),
-      (441, 65, 17, 32, 8, 'd202c0b35f87ccc6986c8cb5833f6a1a5ad13c02fb7233d75d7dbc4a39f6738b'),
-      (442, 66, 18, 32, 9, 'a6059250d3c78e3604a80025bd819cb031c22265e62847c7174fe32aeeffc252'),
-      (443, 67, 19, 32, 9, '4f2d6a4157a4586e3691c832656b536fc5d694fa88f8b6d5dc776fadc7cb8f21'),
-      (444, 68, 20, 32, 9, '055eba0d0761db4bef75f31693658c706bc690cedc866ff3a9c154bdd11e0423'),
-      (445, 69, 21, 32, 10, 'e70c31c0e68457d6ea5e01dc5e1ae1dadf398da1712bb34876e05d95f9e4c045'),
-      (446, 70, 22, 32, 10, 'c7041db2ec4b5c61c4036c6a6707edc71da35476465ce1f04270f49d92f81063'),
-      (447, 71, 23, 32, 10, '839704884f9a683f794f13062281ab24caeec27491ff54efe63e5cb80f50f898'),
-      (448, 8, 24, 8, 24, '2c1d7c0975d9fbffc7feaa7ad00eef9aec0b52d663595c882a19b6ee3dd9dd98'),
-      (449, 9, 25, 9, 25, 'ffa8594321ba3a4b2e66738642862102f4ecb41a09d78e016da854ef8cbf3f80'),
-      (450, 10, 26, 10, 26, 'def3c192ff50706e3f8a5077fde68dac8fb2a5d3b11162c24f8c5f66e16e90bd'),
-      (451, 11, 27, 11, 27, '2a19a527ac7f81d54f0a3d26e6a1c3915f43069d00005768d66f93be13f4da94'),
-      (452, 12, 28, 12, 28, '53b9763e32d019fff58b2601c7ed110e47a7c0c7a42d7d3762c6a9b32c758d88'),
-      (453, 13, 29, 13, 29, '278ef41e146a1d1d0c4fee898d021f5906996328d914c4a185f2d53f52b22ece'),
-      (454, 14, 30, 14, 30, '3af4b434651d37d0ae215af476ffafe4d13e93ad1ed995add997441292a1441c'),
-      (455, 15, 31, 15, 31, '80075f2001e1d388d847cb8eef6ab388f42c5b2286e178afddaf32816019e218'),
-      (456, 16, 32, 16, 32, '9517f79836e02b6871a745834e922261351d33332f8b7e2d22a3a17ff2395535'),
-      (457, 17, 33, 16, 32, 'fd17a1755388af87c74558b13ccf14202f49417859bd1e155588a9d5c643e28e'),
-      (458, 18, 34, 17, 32, 'cbd5daca603a9582d3845d7f728bad3cc8a9e35259925a1ee32e2eabea38062c'),
-      (459, 19, 35, 17, 32, '9089a00a63760922c040d7db7525ca802a99fa76bcf2af41032cb95dfa61a3e7'),
-      (460, 20, 36, 18, 32, '57c0e2ae3c1fa11ed341b4f78ffb364215feb0ed32368c0d384fb8502d8241ea'),
-      (461, 21, 37, 18, 32, '7597f14fe7e6b50b66c61952f768e5422fdb4a0d91c81c17502a633345317d47'),
-      (462, 22, 38, 19, 32, '73fe6347b352e794991003d29cc166fa57a42bbbad3d5ecc70b6bed864e52028'),
-      (463, 23, 39, 19, 32, '449068404b11dcd43aa8a2b88eeb9ca43b968e104a70f4d1b44c998520057527'),
-      (464, 24, 40, 19, 32, '6fac7b6b17435436a3c1dc5b938cfcb1bedd2c0da8e68e90da9e297c915e6c50'),
-      (465, 25, 41, 20, 32, '47804c440f0249e19cc073b7be16a130d47a5ad6b2f46b29368371a5609e574b'),
-      (466, 26, 42, 20, 32, '5623b4685052b4c9cf7acf3701c401c2186bf925f3e33e8b4bbfc48180eae9f7'),
-      (467, 27, 43, 20, 32, 'fdd2fb1a0a97f5d0086b27930ac3d5945e7100fb6fe99cfb966d398c5ad5ef44'),
-      (468, 28, 44, 20, 32, '844475c643a89f5e777ce4781a320cb197448d91e3bc98ce79b425fa41f56a35'),
-      (469, 29, 45, 21, 32, '743dffd43dbd99581397243119c044a3e6520fbaeaf1daa7a8e8bbc0db4f3a62'),
-      (470, 30, 46, 21, 32, '2cacd0c67f84c6b74c4331157dded3708eacd6d59e666c7dfbc882808b68851b'),
-      (471, 31, 47, 21, 32, 'e52712f98f0bafb9ed669e8c6a0d3f96d1123cedbd769cad112042c880beee14'),
-      (472, 32, 48, 21, 32, 'c623ca10f32845e4f850a0033f8bf91268a0065810b84dba707245730a893b98'),
-      (473, 33, 49, 22, 32, '4dbeed31b3ea40ad3e3c7d91bf35afcf62a299b5e54b66f4484f5509054d5fdd'),
-      (474, 34, 50, 22, 32, 'e1ebbedc8f9b45fe484db7c3c6fe5fed8a8bbc0da612debec3562998c13e0ca6'),
-      (475, 35, 51, 22, 32, 'c445248f2786c32f524ea69dfca72c17d5ea2d2aa6defd9691f5a97c234ff1c8'),
-      (476, 36, 52, 22, 32, '7ce99e26d4e6ea24d99f29b710a4d1191d8326526b984006356779d290cdc28e'),
-      (477, 37, 53, 22, 32, '556239982930ea34332747a50c2a9cd72a243f3a5193f2eb1f76e102944db7d2'),
-      (478, 38, 54, 23, 32, 'e21524d226c4143b803bbf7b51a52b85d0e5be25976d187d6945da9dcdd7ad73'),
-      (479, 39, 55, 23, 32, 'e14c3915e1fba9886e6f1c6b3cb525ca971dd2f71431cc210fa71323d0f9b7ff'),
-      (480, 40, 8, 32, 6, '0555c23e11e2e560618d827b0e0ddfcacc3c2d39169212334a76c86bd70eb35a'),
-      (481, 41, 9, 32, 7, '8df40f0b379f87764c8bfcbe8d065edeada29a92cd8d6eb3bcd8318ca21010ee'),
-      (482, 42, 10, 32, 8, 'e2b480c1b89b42c8b057b221ca231ae50cdcc3bc23371ab0f6e5c6d056e9ca32'),
-      (483, 43, 11, 32, 8, '8e7d4a1604edb703c480f0573a02d0a8c28f8e2e3e27496fa980b453b6b9646b'),
-      (484, 44, 12, 32, 9, '794a365189d102626d49a32566b7d2f73562a17d03e5624aea82b1f496eed5d3'),
-      (485, 45, 13, 32, 9, '2000382fa6567bbe224414c299058bb1b7f35ccae86037bd809d47c1c9834c1f'),
-      (486, 46, 14, 32, 10, '73e562d6ffa4d89fccfef27df79df47967c5f0d1a192163d88ee707c5aa7dc9e'),
-      (487, 47, 15, 32, 10, '5481a395627f3488a7b75929ace30d87e6df48b43d005cf33e75a1b9c607b100'),
-      (488, 48, 16, 32, 11, '033e0639be088fbce958ed2e4e224ed0f1f4cba252af28e67bf5f467d7e53931'),
-      (489, 49, 17, 32, 11, 'f549cd290cdbf2e0e1bf90d024838ed38e6728d2cb4d21a30872cf2732b7d48d'),
-      (490, 50, 18, 32, 12, 'd803a43c818a38cca67d1ca24fd0c9cc38bac8d0c96694f78e09a486391cc076'),
-      (491, 51, 19, 32, 12, 'eea92bcbd744078de6e61b20fcdd57e08f99eda0290f076e65257f3993196592'),
-      (492, 52, 20, 32, 12, '9ef5453e2cdeabb7828251bc3609a59b87832ff26ed4c0955f7a4422b0e13854'),
-      (493, 53, 21, 32, 13, '9d6d2e77676e09bd564c87d83ec0b424ea8554775321f11499e613a8d8ec29c4'),
-      (494, 54, 22, 32, 13, '5194d3d90e28428651699e159df8e03665014bdf9ad85de2c1947df7351da12e'),
-      (495, 55, 23, 32, 13, '54b7ae4525db92e2c59ec54efefd3cdaf2571bb66e623b1577ecc76a2e1f51d7'),
-      (496, 56, 24, 32, 14, '2ebb229b85ab221c5286878e8985597c202d0a1ba0d3151322dde8c70f5468b0'),
-      (497, 57, 25, 32, 14, '0d5dab9e2e10aaa61e2e55b8850aab3b76b01dfb157ed9113c6837940da1861f'),
-      (498, 58, 26, 32, 14, 'e45a58846d1ef2316a83e382818464b6140af211c121ed7db731d713350c7c51'),
-      (499, 59, 27, 32, 15, '5eef35e0487b102d789d19d315916c1305a543b0f0a7b99fe74fc63f3f206584'),
-    ],
-  },
-  'q_jpeg_progressive_resize': {
-    153156: [
-      (0, 16, 16, 16, 16, 'c6a693bd324b2bf6c61245e266387123d868d3b4c893e06210236a6e7fb492b6'),
-      (1, 17, 17, 17, 17, '6fab2d0fa3af6206ee7521164eca0425a020fca1d932d03d1907ff2e765266b1'),
-      (2, 18, 18, 18, 18, '5358d3b5a6e12cd06c47a03cd45d97f38eba3d942e23bad348cbeefd47b0a38f'),
-      (3, 19, 19, 19, 19, '825a439320797b0c3b7f8ad7a4fad7fca7d81c34267dd4d8d5cb3ce818799bb2'),
-      (4, 20, 20, 20, 20, 'eedbec1ace83e8a8cda5ea25c0745733b9bc5223db3e6a6af157c53ca2bf5001'),
-      (5, 21, 21, 21, 21, '80ebe768bcc93397d42d65db9bf3484de0de3f377841b9a09852575bc9f26bab'),
-      (6, 22, 22, 22, 22, 'e04271e4ea359d4dfafad17e092e46f94cdcd7dc8f6c5a7eab387aed28da1fb3'),
-      (7, 23, 23, 23, 23, 'e637740293191ade858ad0cfdf26f1622e5eff0c36f1aa98868f703ec5133246'),
-      (8, 24, 24, 24, 24, '6afb3c1f0b11d3f82172ea898bf75096cf0652c3aa86e7692f28541c6d223bea'),
-      (9, 25, 25, 24, 24, 'ddbeb73014c9eab83f427adc00414fe12f76fede7c01cebf390017e9c9842b96'),
-      (10, 26, 26, 24, 24, '0883a67e83d16bfbdd75148c9b69ba4cd44069f6e7d49b3be6ccbc81140ed77f'),
-      (11, 27, 27, 24, 24, '9fd605d489847073073e7ee699b744f4a706136764ece33cef34f93659525e14'),
-      (12, 28, 28, 24, 24, 'cab12173aa6516d84a30b4144251a1504396cc9fb58675efeb2e835687e2a4f6'),
-      (13, 29, 29, 24, 24, '21e3b4b0ce9731d66851eba9e9364206bba12c3f04203c402d5bc84185857051'),
-      (14, 30, 30, 24, 24, '393b78adfa393d79aea7212a3e2ab6965d9b5a4cdb3a7e7d06c45d40c656c80d'),
-      (15, 31, 31, 24, 24, 'fcb2792358621dc05e8c7eb78441fd2be8d83fcd960b6e8650f69efb399567b7'),
-      (16, 32, 32, 24, 24, '6ce89029dcc8cfae7c91561cb555836221b66f197b2bf5b49400fb78f77269fd'),
-      (17, 33, 33, 24, 24, 'a41fb766c9665d724461769aef376d8562ef1a177fe5ff20ecf1e793ac9cd12f'),
-      (18, 34, 34, 24, 24, '537689ec093d9b2fd39c0b01fa174ab012156e2c5e2868e0444e3ef6f194fe90'),
-      (19, 35, 35, 24, 24, '68cd74ab6fec2ff036fd5a704d8a6d334d12c8f4a32a6067d02f4ad1cabc452b'),
-      (20, 36, 36, 24, 24, '68fc2337337ada1ff33a6bbea7f193d9e9ef723e36978e7e2f97bb6fd410d67e'),
-      (21, 37, 37, 24, 24, '9822c8ec32f65715982e7b4ca90c5bbca887a00d920cbe514db86f80a41e2e1f'),
-      (22, 38, 38, 24, 24, '0cb00d667192083496cc02fd732d5f5d659a88a7f6be1249e14b23a7d01e003b'),
-      (23, 39, 39, 24, 24, '93751ab16029b8bd1198cf543de83a4cd24ab704e152ce77c509fdc97ea0c91f'),
-      (24, 40, 40, 24, 24, '09722c7bcae57ccbc93c8394bfd4f8a6e344e63b4fc898a31cff39684b8c72db'),
-      (25, 41, 41, 24, 24, '9dfa26b1155deb340088a30f3f1e5f1dd7c09e4924598e5ebec6d7c677ba24be'),
-      (26, 42, 42, 24, 24, 'c8568d5b8191c1c2cdb47d9dc085f3b27bdd4169af7ea8aad51981eb8df83e1d'),
-      (27, 43, 43, 24, 24, 'c89d717f375e6ce9024b71582cf843e2633f117277ad5ae0ead0d82581901d54'),
-      (28, 44, 44, 24, 24, '5f861a74a4f2cb1fcb60f5906349769effc80a47290cdd9aac7a23a9247c6d1f'),
-      (29, 45, 45, 24, 24, '24efe7fa0c99a48c13a9d14e2253a003da8d09f89e33e698572669e48bbf54ce'),
-      (30, 46, 46, 24, 24, '92bfef2ce7e78f6119665f1537cc51cc55ddfd3ead543cd9127451986afb869f'),
-      (31, 47, 47, 24, 24, 'b01e56f0058b0356c224dcd8db1b9291f1971c65ef219919ba26de536624d5d5'),
-      (32, 48, 48, 24, 24, 'c7ba8903d43074b468edde10956f0da7602cc86cdbdbd374b51464e85459056d'),
-      (33, 49, 49, 24, 24, '511001c6226a41f3fb8f1bd9e38dd638063b27f6bd4dc6ee84c9da13718eb471'),
-      (34, 50, 50, 24, 24, 'd8f96bd525a047d4c82e171dec7cad2c7cbbb23ef1599a9855c24a196c4cb9bf'),
-      (35, 51, 51, 24, 24, '855dfa3c1ea108284ab9bbe124f1119042febbad7fde55395bb85e55744fb89c'),
-      (36, 52, 52, 24, 24, '94814b2ccc0ef271f8aca2f2fcdbd78d80e7d93fb67726714207a0fb5efeb3de'),
-      (37, 53, 53, 24, 24, '13298169dd3107bf8a091bd946e06424f96e2e3e1bffeda5c882c7b4d479e5c8'),
-      (38, 54, 54, 24, 24, '7f4ad8abb65a00f39ac3971fc19d875a0b53f6424c06603f9e582774ea0b59b1'),
-      (39, 55, 55, 24, 24, 'f0c102d463c5b2365e63d9deac1e53cf9998146d1958c6681263905b76946d31'),
-      (40, 56, 56, 24, 24, '601fb4f7b91cde9b0cded40949b1a1a3fdc1d3ea2030f55495982591a9db9f1e'),
-      (41, 57, 57, 24, 24, 'c77a8da76058a207678521fbceaaf85dbf2df597157d7d184c0548a7e711602c'),
-      (42, 58, 58, 24, 24, '9df6845faaee116669c467077d2ec4157315ee5fcaa3b315d5876c9014f3b10d'),
-      (43, 59, 59, 24, 24, 'b35f9b6fb904b23dd9019420dbf75bcb65cb5ecc8c826077158453b1ce96d978'),
-      (44, 60, 60, 24, 24, '2754058cf82cfa982eadb47ad62f5a8074d1c74c8bcb259442852bee12d0463d'),
-      (45, 61, 61, 24, 24, '9540457897d01a2e1b426c5b9453c27db00cabfc1550c09808ce85ecdae1d0bf'),
-      (46, 62, 62, 24, 24, '364b897e4b94826acf244a7810941fa001a214bbf68cd3bf770f68d334de836b'),
-      (47, 63, 63, 24, 24, '16176c09c5082e8bb0e09290e6c13341f24521a91bc01acbf4ee8902c41f0284'),
-      (48, 64, 16, 24, 6, 'ae08a5ac81ccd42cf903d510571de9319f6c039d43268d17838d30954cdf5a96'),
-      (49, 65, 17, 24, 6, '34b56e75ffecbe8087a8237c3f68879a58111dbb2cf4a42d1217d2b4b57f4758'),
-      (50, 66, 18, 24, 7, '510966aa96ec821e868bd8bfb8a2794bf7410fd3164572158ca6ab3d1185c78e'),
-      (51, 67, 19, 24, 7, 'af36a804ef254629fa88e9824d3abcffe2f90dcd302a5c115813455ccb3bde72'),
-      (52, 68, 20, 24, 7, 'd9e1aeed653a3766287c8d8001674a436358e32ee38aa21e3dcd2dec6b4ff37f'),
-      (53, 69, 21, 24, 7, 'cda5c06d08599252496fcc2a22ee6c049b3c131ef81fe2bb2e83320656d7bae2'),
-      (54, 70, 22, 24, 8, '2e81efb54830093ca5fadfd87182f21d73f35a779bf4ea7be872d70ef59057c2'),
-      (55, 71, 23, 24, 8, '42dd232cfaa825d6a641f0c7d8e91fe5db17f9f0d107de763b471ab5b37df1b0'),
-      (56, 72, 24, 24, 8, '0a428696c9be522f7f125eac392284f93e5056b250bd5c627fc5c8ca3d41fc46'),
-      (57, 73, 25, 24, 8, 'c23aa02bdda4efe69bd02c8d70015f00b03c1aeb9bd018a4d797f348dbd3e9b6'),
-      (58, 74, 26, 24, 8, '0c84e91e3ddeabfacec35155f3405d7da5250dbd5cd839246a271ccce1236100'),
-      (59, 75, 27, 24, 9, '1f5857245fc1287c1d0fab69dc1bc785469b3f409fc66840170b61fbbcaaa76f'),
-      (60, 76, 28, 24, 9, 'ad81def98b11558630726e5a44c00d849b2b4fcf79dfadea22abe8558f2ade5d'),
-      (61, 77, 29, 24, 9, 'd885f013a8b50cb3b85ba9e4aa9c97c2663c75108e26997046a2d9f5a1e86c74'),
-      (62, 78, 30, 24, 9, '177c3be799e40dbe54229272a654541b5413041f7cf613bb142e5993a5f5c3b2'),
-      (63, 79, 31, 24, 9, '5f93161f21294a226b42e47e83e3041bdaf8d3948d97fa12d4d2a45f866c5e03'),
-      (64, 16, 32, 12, 24, 'ea7336688d5d5cc5199321d521459742158987b15be6028b981e80f8c629fbf4'),
-      (65, 17, 33, 12, 24, '4fa9716a2c7efa24612a350c9b2fb681e1743838d36aa719897acb33756f13d1'),
-      (66, 18, 34, 13, 24, '6b674e2f1176811b946fda9cf1b181336cb95d4aa91d45ff80a0c17361e0e93e'),
-      (67, 19, 35, 13, 24, 'f1917c6b58b36ce38a89c30cd79b0c30c046eb7014b0d9e9884c5a045987c63a'),
-      (68, 20, 36, 13, 24, '3dff4d378b1dc63869524ef06146091038691a9f47ff2ed9c7aac8de00979831'),
-      (69, 21, 37, 14, 24, 'b6db5cbf8ea20a98cfd8fcbe827937b7da852c6233faade9f794c57a6488a62c'),
-      (70, 22, 38, 14, 24, '3005491509dc6e9e72e20602579741bee419a314bd195430d2daf680ea1cd2c4'),
-      (71, 23, 39, 14, 24, '3e145d278da44efc64070ac7001992239c264a0a6fcf89cf4091fa226a0dc95a'),
-      (72, 24, 40, 14, 24, 'dbb8146aa4dd01b8eb798513211408f6fe2684fa8d0cc913f307756354b8f003'),
-      (73, 25, 41, 15, 24, '76e435077f65b4114c4c8133d62b1e84e521305193fe63a024218a5c0d3acabf'),
-      (74, 26, 42, 15, 24, '4258e783be7c727f4137a08aab74ac427441a69d3b8ace8727fdbde6d0665198'),
-      (75, 27, 43, 15, 24, '20b6a92c3a6f2c1f4b7c0aaf3caa798f38a75ea5fc5dd487096fc462e2b04de0'),
-      (76, 28, 44, 15, 24, '1bb8544dad5bfc6923908a6fcc911f902952a12ed4a4ee083e134272a338ea88'),
-      (77, 29, 45, 15, 24, '131f1146aabbb36df59a51704c1c8133e55e7a5ffda2be5179ace83941f36cf1'),
-      (78, 30, 46, 16, 24, '6c5d963a765bdd36fc55bcb72c7802274e31e33486b557181ad71ebc723c5e87'),
-      (79, 31, 47, 16, 24, '70fea40825a8e3501cb66399b2bf5c1874e66851ad99eebe63ad6f0745b50be9'),
-      (80, 32, 48, 16, 24, 'de5a67a975b970c00b72a768c4355f18a26a5b36b6e2c6ef71fa973eb3134b21'),
-      (81, 33, 49, 16, 24, 'b3aef85807ae9dc756bcc74306811e305058da3e7406821892ba0ac79967af52'),
-      (82, 34, 50, 16, 24, 'd400e1d77b79d9bd2281f7ad098c8fea256d89f5be6ff5017256096910c8e076'),
-      (83, 35, 51, 16, 24, '1f71e68423c9b2f07cfe6983e56113892466bd1377944ba28c24aa9ce4f0d42a'),
-      (84, 36, 52, 17, 24, 'a7edab14ac7a8b58cf48a5adfefa9f4f7fed3cd9274f652e60705792f2fc1580'),
-      (85, 37, 53, 17, 24, '43c899ef4eb4c243c488ede5fc3b55ea8e139a361824ea4547f4820485b0015f'),
-      (86, 38, 54, 17, 24, 'bb9ddd34a46dc47a822d3a4186c282fd1d438009ef470a6597d41b82d75e9c9d'),
-      (87, 39, 55, 17, 24, '0e061ad141aa45d02ec355e125d531307a6118a033b3fed1e9ea7e7cff396b43'),
-      (88, 40, 56, 17, 24, '724909a99f437d4ef753992ea408d8f08d27e684ae2c777abe1bb057d58e26bd'),
-      (89, 41, 57, 17, 24, '7bed7170e09516ea8aba4c2c380ced39642a7ef6870b5fd9d721aa6fcad3c188'),
-      (90, 42, 58, 17, 24, '9c2298d1e33bc566ee8ed0ef3875b89b66568dcfb0e13813521740ad001dbb1b'),
-      (91, 43, 59, 17, 24, '2973e46c3059450953b63e7030a11d23ffc9a16c5ccc252b264e859a776f65a8'),
-      (92, 44, 60, 18, 24, '693129d4a53f630e2b4d832c3a627af31d3e7211693eabf300878fd8ba0f68e1'),
-      (93, 45, 61, 18, 24, 'd4ec3dd1761d4daf850cbe6cad304a4f78c4684adf8a4ea94a5b684d64ad382e'),
-      (94, 46, 62, 18, 24, '9e759ee76bfe1b17982411e7056bf0e84224bd75175c7a26d918173d38d7de9d'),
-      (95, 47, 63, 18, 24, 'f79ddf877ebd7aae11604421b9288081729f6e19bf68a997e0432616f5973b24'),
-      (96, 48, 16, 24, 8, '837e211e4dc40ec564fc95c02a428a6a5f25008ef8eb30d4a711ffb6df43469f'),
-      (97, 49, 17, 24, 8, '8a6bcae275f1e11887baf735e0ce9434535051cc015c1e458271e102436ce25e'),
-      (98, 50, 18, 24, 9, '83d804cbc6fe7273ec1c2b91dbaa04ed3fcaad05cc9f20c783753c8f51e100a0'),
-      (99, 51, 19, 24, 9, '735c2241a36f4a9c6de9adb125151dd84875b1742a5540fa61576568cb1d571d'),
-      (100, 52, 20, 24, 9, '4eaa2e573e25ba55e9cf7f0b839b27c3bf7ca952b44513169fbfe726fa10abce'),
-      (101, 53, 21, 24, 10, '8b606b7c2ac87a73c769682123ef7dd5601fb5fec8b16a863ab3edb4d6d20cd1'),
-      (102, 54, 22, 24, 10, '7bf463ed464b0ad470971aa042cfb389d73bf4dd0edc91f4c83d880ef5663a75'),
-      (103, 55, 23, 24, 10, 'b01ffa1d270b1f8f9606e3d77c0dc94cd4b2a2b7bdbde2e16d329a296ea50670'),
-      (104, 56, 24, 24, 10, '938a43c19b3b204849e85aaad77dab745cb07f5b451e3809e1a78664a76ceb0c'),
-      (105, 57, 25, 24, 11, 'abaa3598630dca26a608932a326fd2e99c9d2a86423f990d81167f9b35e06374'),
-      (106, 58, 26, 24, 11, '2d8aa72f4006d20da48ef18a4f7083fe6ad79cb6c19bb84755790d4861083cdb'),
-      (107, 59, 27, 24, 11, '94ba6cb96a0e22737e0865f730bf74014b10ed653c7157578e17cc40e6af436a'),
-      (108, 60, 28, 24, 11, 'e701a4c0bf50d8f32715f7aa5a9ddd0f99dc2eafff01e42761a98be33bc4bc0b'),
-      (109, 61, 29, 24, 11, '71ef67a16492fe351179a34ecbca823b91fc8fb397bef6227bba816502ec70cb'),
-      (110, 62, 30, 24, 12, 'b2c836a92e1c230bdd7171f81c0437259a796d69c81c87fca84232adc2da837a'),
-      (111, 63, 31, 24, 12, 'ec5cf813d3b52d255f70df1111f3cb8b79b2256f5894dcbc7b9c29d4b78314d9'),
-      (112, 64, 32, 24, 12, '8c1da861bf5887c542d699b7833b96274de5ed5f4da7ee5c9277ec308918bdb5'),
-      (113, 65, 33, 24, 12, '59af7612cc66ff730c91a8b5877ea4fe293b723b36753e1b2e144a60794cb9bc'),
-      (114, 66, 34, 24, 12, 'd0d52b4edd5ecd01ff74ee05c9f2b02293596f90000a0a15a10949eabd3503aa'),
-      (115, 67, 35, 24, 13, '23c00c593d547ddd7b4a9bfdd4d1dcd9e7bca50b8698a39b0a1b8aa388c31f04'),
-      (116, 68, 36, 24, 13, '45220bed60d3ef7bbe1d0f47c0196b338acee2465be298d5d7277e5b0238e966'),
-      (117, 69, 37, 24, 13, 'd914f145f1fa43ac6a7c481238ca25fe1bd2682d4294bbb506f894ae6135074b'),
-      (118, 70, 38, 24, 13, 'f06d02f46f667cb93f4581b27a472b9d79e326e09d9b289ca2bdc53543e25542'),
-      (119, 71, 39, 24, 13, '4cb19fbedb0cb3b862c93337c9596e5df66def960c38881245dae2ebb0c7344d'),
-      (120, 72, 40, 24, 13, 'b472639e03608ae60e6428f68f695f97a5f6a53af3411d288eb5075be98b2a6a'),
-      (121, 73, 41, 24, 13, '9be4233c61b3de4494ae55b3934573c29cb302ad2b5feed6a92c6ec6c1732ab4'),
-      (122, 74, 42, 24, 14, '8393df7be6502d823f8dfe9535c655c438f785c8b836e6bc3ba11ea858df6c05'),
-      (123, 75, 43, 24, 14, '41666171425632731cdaa5da7db51912a6291ec296b1025fe544b06bc0ba0284'),
-      (124, 76, 44, 24, 14, '6aa70b09bc10cd2fd591099fd0cad1f4c5ce40e1ded062db8eb794914ccd3969'),
-      (125, 77, 45, 24, 14, '65b3580b959e53b15c92ea5b324770a3f3402d1447d2b8098bf67dd1d9a1c056'),
-      (126, 78, 46, 24, 14, '0bbbd35e7a9873e2a95354d2c72d263224a4fb32d60ec18ece423d313832f810'),
-      (127, 79, 47, 24, 14, 'c092ede57738b87e8e0192896bc85b979d5b57e927f522d89d50ba9bef7e9c71'),
-      (128, 16, 48, 8, 24, '8d4b8f8db946fe08b5d8a4d1f65654d8fe036867e82e7b92723476ee05a75eea'),
-      (129, 17, 49, 8, 24, '4d884c83b00804842d68b0fc5c7191369a87974e75d541a3adb47f82dc00a49f'),
-      (130, 18, 50, 9, 24, 'c22970988d7d39ea73b30b2edf0eee9dd51cfb1a89c8aecf69513d6d451068ac'),
-      (131, 19, 51, 9, 24, '46b645ad19fcda98b735afc7344c6a67b0a4a012ffc19679a89332c8e0551d4c'),
-      (132, 20, 52, 9, 24, 'd4c757ed63baae93185cfcb3e85644bcc6e0898076962d490c2ea721b720912f'),
-      (133, 21, 53, 10, 24, '659f917d1c6eb03bf808c2795d094a58c98a689407086814e88468d6bfc98fc9'),
-      (134, 22, 54, 10, 24, '54357276af382b77f71f539096c07166f05f97865cd8c2ce8029169161e0c3a2'),
-      (135, 23, 55, 10, 24, '2c788358b19aad82be0e17f686d227bfd0b433e722679030b59ccc54b2637deb'),
-      (136, 24, 56, 10, 24, 'bb9319470dcff993f99b1855ede4f3978b0c29543967ec7f39fa9d2effa9f031'),
-      (137, 25, 57, 11, 24, '7a91701064928c129ae31890cac5ccc6326edab69d07be91c15d04fd6fa44e6c'),
-      (138, 26, 58, 11, 24, 'f34a3e32969a564233676d206e7d7b871ff79c4281879389af631a7f860a547a'),
-      (139, 27, 59, 11, 24, 'c0c5e48bf98e14068a269bec608655bf9a70399bd0b6cd31be3c4f52abfb7d66'),
-      (140, 28, 60, 11, 24, 'af4e4d8ef3a403110eafdc411e160d01759047fef1b4737f52b063d06794545f'),
-      (141, 29, 61, 11, 24, '0b6359c43e676c1fb0ee4dac86812f29a5d3dbeb716ff13d8087a14161f7eef0'),
-      (142, 30, 62, 12, 24, 'c58d34076a3c117bc86558e7552794ceb23c93c4f1148608f318fdee256ec3e6'),
-      (143, 31, 63, 12, 24, 'ff308bede1ce3d132e0d6d05faa53062ca9aabc0ac9811a242b0a6f364d24b3b'),
-      (144, 32, 16, 24, 12, 'a5cad7d0ed3ed63d28701841930716d2afdc11204fa003507458be4d8aa01be7'),
-      (145, 33, 17, 24, 12, 'e9d0987f0a1fb3a8a8bba232f70bf5fd8600dad112fd140c37eb6e37f3360727'),
-      (146, 34, 18, 24, 13, '4a5441e1a195840c430cfe1fccbd7bbedc1d0de8e566ac02d3b50c1cdd963202'),
-      (147, 35, 19, 24, 13, 'a7cf992ca8c5dc7c3ed79e844968ce8f0b88c095725a0850eb7a838b4e777e46'),
-      (148, 36, 20, 24, 13, '0306f0c4952e54d7ab0c108f02f1e2fef46f9b571e91f0710601ea60831ebf1f'),
-      (149, 37, 21, 24, 14, '9eadb049ca1ec8a5dde6a917e12dd5c2b802aec7b8afd27a73d22f6d0ab966cb'),
-      (150, 38, 22, 24, 14, '8b2fabe0cab133f3995900c7667968597d443ea2c2cc9d4ea37a55029b1d79d2'),
-      (151, 39, 23, 24, 14, '6a19871d3d18c6b9a24e5af6037e00adc4fc9bf7baa58fb893275d2127916f64'),
-      (152, 40, 24, 24, 14, '8fd3c38ab99acc8803f2c1891857256e3ba1c9504d4a8d80fd50f061a8ccff1b'),
-      (153, 41, 25, 24, 15, 'efd9f7fb655b5c2f9844e1dfbc02ec362f0d333538064a1a21a474fa40c4cd68'),
-      (154, 42, 26, 24, 15, '60c8f070b74f2c424d700763acf271a8494726902c6712ff60db965548b746c5'),
-      (155, 43, 27, 24, 15, '5032334ab8470ea1bf3fce15ee0800648398cf49307a437ace3fdd330550443f'),
-      (156, 44, 28, 24, 15, '2e8a97079cf707a961e3dc3b25c3c676bd707b4464a2b14e7bbaac44d62eb27f'),
-      (157, 45, 29, 24, 15, '8f1ffbdcf9ce319e4d98d7fb6b294bcebde4c042244b8d2373213b6aa8e820bb'),
-      (158, 46, 30, 24, 16, 'e3aee19c1dbf13390b98cbf8c841fe3e13c160b39aba396ec3743ac2dc56e492'),
-      (159, 47, 31, 24, 16, '106ffe3c69f25e777a4d3d3533d9b82aa0435851b92c7bd204553c603ce03844'),
-      (160, 48, 32, 24, 16, 'b814a18cf99c7acd328508676b95e5705837fc4ceff527c55bb89d30e217f4a1'),
-      (161, 49, 33, 24, 16, '06da26174b9232e5ee2631af4a73125a3f77dec3f83190c10164643f8b769fc1'),
-      (162, 50, 34, 24, 16, 'd6ae1be1f1d521c4b74420f35dcdfd69ac991423050d900a60c3e4c5e2bb8f6f'),
-      (163, 51, 35, 24, 16, '77e79e9268935bcff1016363d1347eeeb5dfd9dd52d34fdfd80df5d20e773844'),
-      (164, 52, 36, 24, 17, 'b5cfaea2fb249ea85cfdbc20dbca412e360def6e055d77a13c4ff679928ccb82'),
-      (165, 53, 37, 24, 17, '05f843011f28d491d8686850ac309c8f2de3a8c979244d66c7f3f4da1fce34c9'),
-      (166, 54, 38, 24, 17, 'e09c44dd8d8bd94c4b165387cb9cec7b3e61dcc8f89e5dfa12477388bbdf7a69'),
-      (167, 55, 39, 24, 17, 'c658f322ca42daa354227fb965c096f66b54192e39769a0a8e37d87f0a6e1f39'),
-      (168, 56, 40, 24, 17, '2090714e3d7018405f4b98fbe25164e1fd380c107f335d3fbeb9817d16f41210'),
-      (169, 57, 41, 24, 17, 'd384a75cb00e0a544448fa6b6e29e986db7e59ba0929fcde6ee2f2b51ff89dbf'),
-      (170, 58, 42, 24, 17, 'f8c21524b5ae407bb16f3962c192edeb551c27e3d5d8c337edbe0ee7e3bd3cdb'),
-      (171, 59, 43, 24, 17, 'fedb67f198aea0858b563c89c50421e31a53d471f7488cab0ee30b023123ae1d'),
-      (172, 60, 44, 24, 18, '9b06832a4d7a20b81e7f44eaf407bc5150380b4b208835f990deb92738695e55'),
-      (173, 61, 45, 24, 18, 'b53f528922d32c36d39e316582e7190695eebd71133c736b5889dbf1a9919017'),
-      (174, 62, 46, 24, 18, '34d53494120aa9f5aee17a825f13acac9a49c9e79568677b21008f9f62feb336'),
-      (175, 63, 47, 24, 18, '35e3b18c94d2c4618224cefc735f9a30754cf543f4fe60a679c224b54d4737fd'),
-      (176, 64, 48, 24, 18, '9aa8336bce927edde8bbd5e29bb1a254a6cf5cc2e01b88946a6a202e849d7178'),
-      (177, 65, 49, 24, 18, 'e4b5644d8bd02a4538e72e1f0e182f95b9ac76d5cdd63a1b40c7f2fd7f1c23c5'),
-      (178, 66, 50, 24, 18, 'f1d037f9feea0b92e69a6ce02555d61d8f625131ac124eb5e85a81261ff42a91'),
-      (179, 67, 51, 24, 18, '04ef5553fd8bcef02e2e0e06799e6a6fad8bb3784de10644884336a210737512'),
-      (180, 68, 52, 24, 18, '053d96e0b9f1d6ef3444a0ed55d4fda2cd973eb0bc1afa66de42afb3858c4466'),
-      (181, 69, 53, 24, 18, '948c9c3afb23db86c461afdc5b768e463beec8d9e5fe54e0ef21426bdc374ed1'),
-      (182, 70, 54, 24, 19, '16364d4876e4b5dba3a3188b17e67eb81bcd3f0a1adc6ab162f8683b71b6d4b0'),
-      (183, 71, 55, 24, 19, '223ed090dc4e5b9b015983b237be92f5db55755d8f613f3f885680ed3d1acf3d'),
-      (184, 72, 56, 24, 19, '64afd31f1416ce95b2569b80391e4bfeafba408f5ac6d2b4eab8a6fbe1bf5528'),
-      (185, 73, 57, 24, 19, 'e53423f11b43bc9508a071e3ccce10d9a004da5244f998d7274c9c3ff38f445a'),
-      (186, 74, 58, 24, 19, 'afce3e3ec8645226b1e0da1bccace2380f04ba016f0264e9a32cea15b4542a15'),
-      (187, 75, 59, 24, 19, 'c989b2ce83aee3e7e67a79222aabbc454f56ce8fe875244b37477cfa12b8fd37'),
-      (188, 76, 60, 24, 19, 'baaa3e1dd4a1ce98f3930bb2322345f89413fdd137440ae33480d33325d78e96'),
-      (189, 77, 61, 24, 19, '121eea3c1a243451f67f7df318f36a19a3be55e99e989f12f8e5c93cfaca448c'),
-      (190, 78, 62, 24, 19, '2d0e1b0f9c5ef4010e2c692b26ed1011df51e49d134b76e312c05840f8788697'),
-      (191, 79, 63, 24, 19, '3631fef95bd88756ac752b603c09aefa596a448642fb6fe84a49e1a2ab873843'),
-      (192, 16, 16, 16, 16, 'c6a693bd324b2bf6c61245e266387123d868d3b4c893e06210236a6e7fb492b6'),
-      (193, 17, 17, 17, 17, '6fab2d0fa3af6206ee7521164eca0425a020fca1d932d03d1907ff2e765266b1'),
-      (194, 18, 18, 18, 18, '5358d3b5a6e12cd06c47a03cd45d97f38eba3d942e23bad348cbeefd47b0a38f'),
-      (195, 19, 19, 19, 19, '825a439320797b0c3b7f8ad7a4fad7fca7d81c34267dd4d8d5cb3ce818799bb2'),
-      (196, 20, 20, 20, 20, 'eedbec1ace83e8a8cda5ea25c0745733b9bc5223db3e6a6af157c53ca2bf5001'),
-      (197, 21, 21, 21, 21, '80ebe768bcc93397d42d65db9bf3484de0de3f377841b9a09852575bc9f26bab'),
-      (198, 22, 22, 22, 22, 'e04271e4ea359d4dfafad17e092e46f94cdcd7dc8f6c5a7eab387aed28da1fb3'),
-      (199, 23, 23, 23, 23, 'e637740293191ade858ad0cfdf26f1622e5eff0c36f1aa98868f703ec5133246'),
-      (200, 24, 24, 24, 24, '6afb3c1f0b11d3f82172ea898bf75096cf0652c3aa86e7692f28541c6d223bea'),
-      (201, 25, 25, 24, 24, 'ddbeb73014c9eab83f427adc00414fe12f76fede7c01cebf390017e9c9842b96'),
-      (202, 26, 26, 24, 24, '0883a67e83d16bfbdd75148c9b69ba4cd44069f6e7d49b3be6ccbc81140ed77f'),
-      (203, 27, 27, 24, 24, '9fd605d489847073073e7ee699b744f4a706136764ece33cef34f93659525e14'),
-      (204, 28, 28, 24, 24, 'cab12173aa6516d84a30b4144251a1504396cc9fb58675efeb2e835687e2a4f6'),
-      (205, 29, 29, 24, 24, '21e3b4b0ce9731d66851eba9e9364206bba12c3f04203c402d5bc84185857051'),
-      (206, 30, 30, 24, 24, '393b78adfa393d79aea7212a3e2ab6965d9b5a4cdb3a7e7d06c45d40c656c80d'),
-      (207, 31, 31, 24, 24, 'fcb2792358621dc05e8c7eb78441fd2be8d83fcd960b6e8650f69efb399567b7'),
-      (208, 32, 32, 24, 24, '6ce89029dcc8cfae7c91561cb555836221b66f197b2bf5b49400fb78f77269fd'),
-      (209, 33, 33, 24, 24, 'a41fb766c9665d724461769aef376d8562ef1a177fe5ff20ecf1e793ac9cd12f'),
-      (210, 34, 34, 24, 24, '537689ec093d9b2fd39c0b01fa174ab012156e2c5e2868e0444e3ef6f194fe90'),
-      (211, 35, 35, 24, 24, '68cd74ab6fec2ff036fd5a704d8a6d334d12c8f4a32a6067d02f4ad1cabc452b'),
-      (212, 36, 36, 24, 24, '68fc2337337ada1ff33a6bbea7f193d9e9ef723e36978e7e2f97bb6fd410d67e'),
-      (213, 37, 37, 24, 24, '9822c8ec32f65715982e7b4ca90c5bbca887a00d920cbe514db86f80a41e2e1f'),
-      (214, 38, 38, 24, 24, '0cb00d667192083496cc02fd732d5f5d659a88a7f6be1249e14b23a7d01e003b'),
-      (215, 39, 39, 24, 24, '93751ab16029b8bd1198cf543de83a4cd24ab704e152ce77c509fdc97ea0c91f'),
-      (216, 40, 40, 24, 24, '09722c7bcae57ccbc93c8394bfd4f8a6e344e63b4fc898a31cff39684b8c72db'),
-      (217, 41, 41, 24, 24, '9dfa26b1155deb340088a30f3f1e5f1dd7c09e4924598e5ebec6d7c677ba24be'),
-      (218, 42, 42, 24, 24, 'c8568d5b8191c1c2cdb47d9dc085f3b27bdd4169af7ea8aad51981eb8df83e1d'),
-      (219, 43, 43, 24, 24, 'c89d717f375e6ce9024b71582cf843e2633f117277ad5ae0ead0d82581901d54'),
-      (220, 44, 44, 24, 24, '5f861a74a4f2cb1fcb60f5906349769effc80a47290cdd9aac7a23a9247c6d1f'),
-      (221, 45, 45, 24, 24, '24efe7fa0c99a48c13a9d14e2253a003da8d09f89e33e698572669e48bbf54ce'),
-      (222, 46, 46, 24, 24, '92bfef2ce7e78f6119665f1537cc51cc55ddfd3ead543cd9127451986afb869f'),
-      (223, 47, 47, 24, 24, 'b01e56f0058b0356c224dcd8db1b9291f1971c65ef219919ba26de536624d5d5'),
-      (224, 48, 48, 24, 24, 'c7ba8903d43074b468edde10956f0da7602cc86cdbdbd374b51464e85459056d'),
-      (225, 49, 49, 24, 24, '511001c6226a41f3fb8f1bd9e38dd638063b27f6bd4dc6ee84c9da13718eb471'),
-      (226, 50, 50, 24, 24, 'd8f96bd525a047d4c82e171dec7cad2c7cbbb23ef1599a9855c24a196c4cb9bf'),
-      (227, 51, 51, 24, 24, '855dfa3c1ea108284ab9bbe124f1119042febbad7fde55395bb85e55744fb89c'),
-      (228, 52, 52, 24, 24, '94814b2ccc0ef271f8aca2f2fcdbd78d80e7d93fb67726714207a0fb5efeb3de'),
-      (229, 53, 53, 24, 24, '13298169dd3107bf8a091bd946e06424f96e2e3e1bffeda5c882c7b4d479e5c8'),
-      (230, 54, 54, 24, 24, '7f4ad8abb65a00f39ac3971fc19d875a0b53f6424c06603f9e582774ea0b59b1'),
-      (231, 55, 55, 24, 24, 'f0c102d463c5b2365e63d9deac1e53cf9998146d1958c6681263905b76946d31'),
-      (232, 56, 56, 24, 24, '601fb4f7b91cde9b0cded40949b1a1a3fdc1d3ea2030f55495982591a9db9f1e'),
-      (233, 57, 57, 24, 24, 'c77a8da76058a207678521fbceaaf85dbf2df597157d7d184c0548a7e711602c'),
-      (234, 58, 58, 24, 24, '9df6845faaee116669c467077d2ec4157315ee5fcaa3b315d5876c9014f3b10d'),
-      (235, 59, 59, 24, 24, 'b35f9b6fb904b23dd9019420dbf75bcb65cb5ecc8c826077158453b1ce96d978'),
-      (236, 60, 60, 24, 24, '2754058cf82cfa982eadb47ad62f5a8074d1c74c8bcb259442852bee12d0463d'),
-      (237, 61, 61, 24, 24, '9540457897d01a2e1b426c5b9453c27db00cabfc1550c09808ce85ecdae1d0bf'),
-      (238, 62, 62, 24, 24, '364b897e4b94826acf244a7810941fa001a214bbf68cd3bf770f68d334de836b'),
-      (239, 63, 63, 24, 24, '16176c09c5082e8bb0e09290e6c13341f24521a91bc01acbf4ee8902c41f0284'),
-      (240, 64, 16, 24, 6, 'ae08a5ac81ccd42cf903d510571de9319f6c039d43268d17838d30954cdf5a96'),
-      (241, 65, 17, 24, 6, '34b56e75ffecbe8087a8237c3f68879a58111dbb2cf4a42d1217d2b4b57f4758'),
-      (242, 66, 18, 24, 7, '510966aa96ec821e868bd8bfb8a2794bf7410fd3164572158ca6ab3d1185c78e'),
-      (243, 67, 19, 24, 7, 'af36a804ef254629fa88e9824d3abcffe2f90dcd302a5c115813455ccb3bde72'),
-      (244, 68, 20, 24, 7, 'd9e1aeed653a3766287c8d8001674a436358e32ee38aa21e3dcd2dec6b4ff37f'),
-      (245, 69, 21, 24, 7, 'cda5c06d08599252496fcc2a22ee6c049b3c131ef81fe2bb2e83320656d7bae2'),
-      (246, 70, 22, 24, 8, '2e81efb54830093ca5fadfd87182f21d73f35a779bf4ea7be872d70ef59057c2'),
-      (247, 71, 23, 24, 8, '42dd232cfaa825d6a641f0c7d8e91fe5db17f9f0d107de763b471ab5b37df1b0'),
-      (248, 72, 24, 24, 8, '0a428696c9be522f7f125eac392284f93e5056b250bd5c627fc5c8ca3d41fc46'),
-      (249, 73, 25, 24, 8, 'c23aa02bdda4efe69bd02c8d70015f00b03c1aeb9bd018a4d797f348dbd3e9b6'),
-      (250, 74, 26, 24, 8, '0c84e91e3ddeabfacec35155f3405d7da5250dbd5cd839246a271ccce1236100'),
-      (251, 75, 27, 24, 9, '1f5857245fc1287c1d0fab69dc1bc785469b3f409fc66840170b61fbbcaaa76f'),
-      (252, 76, 28, 24, 9, 'ad81def98b11558630726e5a44c00d849b2b4fcf79dfadea22abe8558f2ade5d'),
-      (253, 77, 29, 24, 9, 'd885f013a8b50cb3b85ba9e4aa9c97c2663c75108e26997046a2d9f5a1e86c74'),
-      (254, 78, 30, 24, 9, '177c3be799e40dbe54229272a654541b5413041f7cf613bb142e5993a5f5c3b2'),
-      (255, 79, 31, 24, 9, '5f93161f21294a226b42e47e83e3041bdaf8d3948d97fa12d4d2a45f866c5e03'),
-      (256, 16, 32, 12, 24, 'ea7336688d5d5cc5199321d521459742158987b15be6028b981e80f8c629fbf4'),
-      (257, 17, 33, 12, 24, '4fa9716a2c7efa24612a350c9b2fb681e1743838d36aa719897acb33756f13d1'),
-      (258, 18, 34, 13, 24, '6b674e2f1176811b946fda9cf1b181336cb95d4aa91d45ff80a0c17361e0e93e'),
-      (259, 19, 35, 13, 24, 'f1917c6b58b36ce38a89c30cd79b0c30c046eb7014b0d9e9884c5a045987c63a'),
-      (260, 20, 36, 13, 24, '3dff4d378b1dc63869524ef06146091038691a9f47ff2ed9c7aac8de00979831'),
-      (261, 21, 37, 14, 24, 'b6db5cbf8ea20a98cfd8fcbe827937b7da852c6233faade9f794c57a6488a62c'),
-      (262, 22, 38, 14, 24, '3005491509dc6e9e72e20602579741bee419a314bd195430d2daf680ea1cd2c4'),
-      (263, 23, 39, 14, 24, '3e145d278da44efc64070ac7001992239c264a0a6fcf89cf4091fa226a0dc95a'),
-      (264, 24, 40, 14, 24, 'dbb8146aa4dd01b8eb798513211408f6fe2684fa8d0cc913f307756354b8f003'),
-      (265, 25, 41, 15, 24, '76e435077f65b4114c4c8133d62b1e84e521305193fe63a024218a5c0d3acabf'),
-      (266, 26, 42, 15, 24, '4258e783be7c727f4137a08aab74ac427441a69d3b8ace8727fdbde6d0665198'),
-      (267, 27, 43, 15, 24, '20b6a92c3a6f2c1f4b7c0aaf3caa798f38a75ea5fc5dd487096fc462e2b04de0'),
-      (268, 28, 44, 15, 24, '1bb8544dad5bfc6923908a6fcc911f902952a12ed4a4ee083e134272a338ea88'),
-      (269, 29, 45, 15, 24, '131f1146aabbb36df59a51704c1c8133e55e7a5ffda2be5179ace83941f36cf1'),
-      (270, 30, 46, 16, 24, '6c5d963a765bdd36fc55bcb72c7802274e31e33486b557181ad71ebc723c5e87'),
-      (271, 31, 47, 16, 24, '70fea40825a8e3501cb66399b2bf5c1874e66851ad99eebe63ad6f0745b50be9'),
-      (272, 32, 48, 16, 24, 'de5a67a975b970c00b72a768c4355f18a26a5b36b6e2c6ef71fa973eb3134b21'),
-      (273, 33, 49, 16, 24, 'b3aef85807ae9dc756bcc74306811e305058da3e7406821892ba0ac79967af52'),
-      (274, 34, 50, 16, 24, 'd400e1d77b79d9bd2281f7ad098c8fea256d89f5be6ff5017256096910c8e076'),
-      (275, 35, 51, 16, 24, '1f71e68423c9b2f07cfe6983e56113892466bd1377944ba28c24aa9ce4f0d42a'),
-      (276, 36, 52, 17, 24, 'a7edab14ac7a8b58cf48a5adfefa9f4f7fed3cd9274f652e60705792f2fc1580'),
-      (277, 37, 53, 17, 24, '43c899ef4eb4c243c488ede5fc3b55ea8e139a361824ea4547f4820485b0015f'),
-      (278, 38, 54, 17, 24, 'bb9ddd34a46dc47a822d3a4186c282fd1d438009ef470a6597d41b82d75e9c9d'),
-      (279, 39, 55, 17, 24, '0e061ad141aa45d02ec355e125d531307a6118a033b3fed1e9ea7e7cff396b43'),
-      (280, 40, 56, 17, 24, '724909a99f437d4ef753992ea408d8f08d27e684ae2c777abe1bb057d58e26bd'),
-      (281, 41, 57, 17, 24, '7bed7170e09516ea8aba4c2c380ced39642a7ef6870b5fd9d721aa6fcad3c188'),
-      (282, 42, 58, 17, 24, '9c2298d1e33bc566ee8ed0ef3875b89b66568dcfb0e13813521740ad001dbb1b'),
-      (283, 43, 59, 17, 24, '2973e46c3059450953b63e7030a11d23ffc9a16c5ccc252b264e859a776f65a8'),
-      (284, 44, 60, 18, 24, '693129d4a53f630e2b4d832c3a627af31d3e7211693eabf300878fd8ba0f68e1'),
-      (285, 45, 61, 18, 24, 'd4ec3dd1761d4daf850cbe6cad304a4f78c4684adf8a4ea94a5b684d64ad382e'),
-      (286, 46, 62, 18, 24, '9e759ee76bfe1b17982411e7056bf0e84224bd75175c7a26d918173d38d7de9d'),
-      (287, 47, 63, 18, 24, 'f79ddf877ebd7aae11604421b9288081729f6e19bf68a997e0432616f5973b24'),
-      (288, 48, 16, 24, 8, '837e211e4dc40ec564fc95c02a428a6a5f25008ef8eb30d4a711ffb6df43469f'),
-      (289, 49, 17, 24, 8, '8a6bcae275f1e11887baf735e0ce9434535051cc015c1e458271e102436ce25e'),
-      (290, 50, 18, 24, 9, '83d804cbc6fe7273ec1c2b91dbaa04ed3fcaad05cc9f20c783753c8f51e100a0'),
-      (291, 51, 19, 24, 9, '735c2241a36f4a9c6de9adb125151dd84875b1742a5540fa61576568cb1d571d'),
-      (292, 52, 20, 24, 9, '4eaa2e573e25ba55e9cf7f0b839b27c3bf7ca952b44513169fbfe726fa10abce'),
-      (293, 53, 21, 24, 10, '8b606b7c2ac87a73c769682123ef7dd5601fb5fec8b16a863ab3edb4d6d20cd1'),
-      (294, 54, 22, 24, 10, '7bf463ed464b0ad470971aa042cfb389d73bf4dd0edc91f4c83d880ef5663a75'),
-      (295, 55, 23, 24, 10, 'b01ffa1d270b1f8f9606e3d77c0dc94cd4b2a2b7bdbde2e16d329a296ea50670'),
-      (296, 56, 24, 24, 10, '938a43c19b3b204849e85aaad77dab745cb07f5b451e3809e1a78664a76ceb0c'),
-      (297, 57, 25, 24, 11, 'abaa3598630dca26a608932a326fd2e99c9d2a86423f990d81167f9b35e06374'),
-      (298, 58, 26, 24, 11, '2d8aa72f4006d20da48ef18a4f7083fe6ad79cb6c19bb84755790d4861083cdb'),
-      (299, 59, 27, 24, 11, '94ba6cb96a0e22737e0865f730bf74014b10ed653c7157578e17cc40e6af436a'),
-      (300, 60, 28, 24, 11, 'e701a4c0bf50d8f32715f7aa5a9ddd0f99dc2eafff01e42761a98be33bc4bc0b'),
-      (301, 61, 29, 24, 11, '71ef67a16492fe351179a34ecbca823b91fc8fb397bef6227bba816502ec70cb'),
-      (302, 62, 30, 24, 12, 'b2c836a92e1c230bdd7171f81c0437259a796d69c81c87fca84232adc2da837a'),
-      (303, 63, 31, 24, 12, 'ec5cf813d3b52d255f70df1111f3cb8b79b2256f5894dcbc7b9c29d4b78314d9'),
-      (304, 64, 32, 24, 12, '8c1da861bf5887c542d699b7833b96274de5ed5f4da7ee5c9277ec308918bdb5'),
-      (305, 65, 33, 24, 12, '59af7612cc66ff730c91a8b5877ea4fe293b723b36753e1b2e144a60794cb9bc'),
-      (306, 66, 34, 24, 12, 'd0d52b4edd5ecd01ff74ee05c9f2b02293596f90000a0a15a10949eabd3503aa'),
-      (307, 67, 35, 24, 13, '23c00c593d547ddd7b4a9bfdd4d1dcd9e7bca50b8698a39b0a1b8aa388c31f04'),
-      (308, 68, 36, 24, 13, '45220bed60d3ef7bbe1d0f47c0196b338acee2465be298d5d7277e5b0238e966'),
-      (309, 69, 37, 24, 13, 'd914f145f1fa43ac6a7c481238ca25fe1bd2682d4294bbb506f894ae6135074b'),
-      (310, 70, 38, 24, 13, 'f06d02f46f667cb93f4581b27a472b9d79e326e09d9b289ca2bdc53543e25542'),
-      (311, 71, 39, 24, 13, '4cb19fbedb0cb3b862c93337c9596e5df66def960c38881245dae2ebb0c7344d'),
-      (312, 72, 40, 24, 13, 'b472639e03608ae60e6428f68f695f97a5f6a53af3411d288eb5075be98b2a6a'),
-      (313, 73, 41, 24, 13, '9be4233c61b3de4494ae55b3934573c29cb302ad2b5feed6a92c6ec6c1732ab4'),
-      (314, 74, 42, 24, 14, '8393df7be6502d823f8dfe9535c655c438f785c8b836e6bc3ba11ea858df6c05'),
-      (315, 75, 43, 24, 14, '41666171425632731cdaa5da7db51912a6291ec296b1025fe544b06bc0ba0284'),
-      (316, 76, 44, 24, 14, '6aa70b09bc10cd2fd591099fd0cad1f4c5ce40e1ded062db8eb794914ccd3969'),
-      (317, 77, 45, 24, 14, '65b3580b959e53b15c92ea5b324770a3f3402d1447d2b8098bf67dd1d9a1c056'),
-      (318, 78, 46, 24, 14, '0bbbd35e7a9873e2a95354d2c72d263224a4fb32d60ec18ece423d313832f810'),
-      (319, 79, 47, 24, 14, 'c092ede57738b87e8e0192896bc85b979d5b57e927f522d89d50ba9bef7e9c71'),
-      (320, 16, 48, 8, 24, '8d4b8f8db946fe08b5d8a4d1f65654d8fe036867e82e7b92723476ee05a75eea'),
-      (321, 17, 49, 8, 24, '4d884c83b00804842d68b0fc5c7191369a87974e75d541a3adb47f82dc00a49f'),
-      (322, 18, 50, 9, 24, 'c22970988d7d39ea73b30b2edf0eee9dd51cfb1a89c8aecf69513d6d451068ac'),
-      (323, 19, 51, 9, 24, '46b645ad19fcda98b735afc7344c6a67b0a4a012ffc19679a89332c8e0551d4c'),
-      (324, 20, 52, 9, 24, 'd4c757ed63baae93185cfcb3e85644bcc6e0898076962d490c2ea721b720912f'),
-      (325, 21, 53, 10, 24, '659f917d1c6eb03bf808c2795d094a58c98a689407086814e88468d6bfc98fc9'),
-      (326, 22, 54, 10, 24, '54357276af382b77f71f539096c07166f05f97865cd8c2ce8029169161e0c3a2'),
-      (327, 23, 55, 10, 24, '2c788358b19aad82be0e17f686d227bfd0b433e722679030b59ccc54b2637deb'),
-      (328, 24, 56, 10, 24, 'bb9319470dcff993f99b1855ede4f3978b0c29543967ec7f39fa9d2effa9f031'),
-      (329, 25, 57, 11, 24, '7a91701064928c129ae31890cac5ccc6326edab69d07be91c15d04fd6fa44e6c'),
-      (330, 26, 58, 11, 24, 'f34a3e32969a564233676d206e7d7b871ff79c4281879389af631a7f860a547a'),
-      (331, 27, 59, 11, 24, 'c0c5e48bf98e14068a269bec608655bf9a70399bd0b6cd31be3c4f52abfb7d66'),
-      (332, 28, 60, 11, 24, 'af4e4d8ef3a403110eafdc411e160d01759047fef1b4737f52b063d06794545f'),
-      (333, 29, 61, 11, 24, '0b6359c43e676c1fb0ee4dac86812f29a5d3dbeb716ff13d8087a14161f7eef0'),
-      (334, 30, 62, 12, 24, 'c58d34076a3c117bc86558e7552794ceb23c93c4f1148608f318fdee256ec3e6'),
-      (335, 31, 63, 12, 24, 'ff308bede1ce3d132e0d6d05faa53062ca9aabc0ac9811a242b0a6f364d24b3b'),
-      (336, 32, 16, 24, 12, 'a5cad7d0ed3ed63d28701841930716d2afdc11204fa003507458be4d8aa01be7'),
-      (337, 33, 17, 24, 12, 'e9d0987f0a1fb3a8a8bba232f70bf5fd8600dad112fd140c37eb6e37f3360727'),
-      (338, 34, 18, 24, 13, '4a5441e1a195840c430cfe1fccbd7bbedc1d0de8e566ac02d3b50c1cdd963202'),
-      (339, 35, 19, 24, 13, 'a7cf992ca8c5dc7c3ed79e844968ce8f0b88c095725a0850eb7a838b4e777e46'),
-      (340, 36, 20, 24, 13, '0306f0c4952e54d7ab0c108f02f1e2fef46f9b571e91f0710601ea60831ebf1f'),
-      (341, 37, 21, 24, 14, '9eadb049ca1ec8a5dde6a917e12dd5c2b802aec7b8afd27a73d22f6d0ab966cb'),
-      (342, 38, 22, 24, 14, '8b2fabe0cab133f3995900c7667968597d443ea2c2cc9d4ea37a55029b1d79d2'),
-      (343, 39, 23, 24, 14, '6a19871d3d18c6b9a24e5af6037e00adc4fc9bf7baa58fb893275d2127916f64'),
-      (344, 40, 24, 24, 14, '8fd3c38ab99acc8803f2c1891857256e3ba1c9504d4a8d80fd50f061a8ccff1b'),
-      (345, 41, 25, 24, 15, 'efd9f7fb655b5c2f9844e1dfbc02ec362f0d333538064a1a21a474fa40c4cd68'),
-      (346, 42, 26, 24, 15, '60c8f070b74f2c424d700763acf271a8494726902c6712ff60db965548b746c5'),
-      (347, 43, 27, 24, 15, '5032334ab8470ea1bf3fce15ee0800648398cf49307a437ace3fdd330550443f'),
-      (348, 44, 28, 24, 15, '2e8a97079cf707a961e3dc3b25c3c676bd707b4464a2b14e7bbaac44d62eb27f'),
-      (349, 45, 29, 24, 15, '8f1ffbdcf9ce319e4d98d7fb6b294bcebde4c042244b8d2373213b6aa8e820bb'),
-      (350, 46, 30, 24, 16, 'e3aee19c1dbf13390b98cbf8c841fe3e13c160b39aba396ec3743ac2dc56e492'),
-      (351, 47, 31, 24, 16, '106ffe3c69f25e777a4d3d3533d9b82aa0435851b92c7bd204553c603ce03844'),
-      (352, 48, 32, 24, 16, 'b814a18cf99c7acd328508676b95e5705837fc4ceff527c55bb89d30e217f4a1'),
-      (353, 49, 33, 24, 16, '06da26174b9232e5ee2631af4a73125a3f77dec3f83190c10164643f8b769fc1'),
-      (354, 50, 34, 24, 16, 'd6ae1be1f1d521c4b74420f35dcdfd69ac991423050d900a60c3e4c5e2bb8f6f'),
-      (355, 51, 35, 24, 16, '77e79e9268935bcff1016363d1347eeeb5dfd9dd52d34fdfd80df5d20e773844'),
-      (356, 52, 36, 24, 17, 'b5cfaea2fb249ea85cfdbc20dbca412e360def6e055d77a13c4ff679928ccb82'),
-      (357, 53, 37, 24, 17, '05f843011f28d491d8686850ac309c8f2de3a8c979244d66c7f3f4da1fce34c9'),
-      (358, 54, 38, 24, 17, 'e09c44dd8d8bd94c4b165387cb9cec7b3e61dcc8f89e5dfa12477388bbdf7a69'),
-      (359, 55, 39, 24, 17, 'c658f322ca42daa354227fb965c096f66b54192e39769a0a8e37d87f0a6e1f39'),
-      (360, 56, 40, 24, 17, '2090714e3d7018405f4b98fbe25164e1fd380c107f335d3fbeb9817d16f41210'),
-      (361, 57, 41, 24, 17, 'd384a75cb00e0a544448fa6b6e29e986db7e59ba0929fcde6ee2f2b51ff89dbf'),
-      (362, 58, 42, 24, 17, 'f8c21524b5ae407bb16f3962c192edeb551c27e3d5d8c337edbe0ee7e3bd3cdb'),
-      (363, 59, 43, 24, 17, 'fedb67f198aea0858b563c89c50421e31a53d471f7488cab0ee30b023123ae1d'),
-      (364, 60, 44, 24, 18, '9b06832a4d7a20b81e7f44eaf407bc5150380b4b208835f990deb92738695e55'),
-      (365, 61, 45, 24, 18, 'b53f528922d32c36d39e316582e7190695eebd71133c736b5889dbf1a9919017'),
-      (366, 62, 46, 24, 18, '34d53494120aa9f5aee17a825f13acac9a49c9e79568677b21008f9f62feb336'),
-      (367, 63, 47, 24, 18, '35e3b18c94d2c4618224cefc735f9a30754cf543f4fe60a679c224b54d4737fd'),
-      (368, 64, 48, 24, 18, '9aa8336bce927edde8bbd5e29bb1a254a6cf5cc2e01b88946a6a202e849d7178'),
-      (369, 65, 49, 24, 18, 'e4b5644d8bd02a4538e72e1f0e182f95b9ac76d5cdd63a1b40c7f2fd7f1c23c5'),
-      (370, 66, 50, 24, 18, 'f1d037f9feea0b92e69a6ce02555d61d8f625131ac124eb5e85a81261ff42a91'),
-      (371, 67, 51, 24, 18, '04ef5553fd8bcef02e2e0e06799e6a6fad8bb3784de10644884336a210737512'),
-      (372, 68, 52, 24, 18, '053d96e0b9f1d6ef3444a0ed55d4fda2cd973eb0bc1afa66de42afb3858c4466'),
-      (373, 69, 53, 24, 18, '948c9c3afb23db86c461afdc5b768e463beec8d9e5fe54e0ef21426bdc374ed1'),
-      (374, 70, 54, 24, 19, '16364d4876e4b5dba3a3188b17e67eb81bcd3f0a1adc6ab162f8683b71b6d4b0'),
-      (375, 71, 55, 24, 19, '223ed090dc4e5b9b015983b237be92f5db55755d8f613f3f885680ed3d1acf3d'),
-      (376, 72, 56, 24, 19, '64afd31f1416ce95b2569b80391e4bfeafba408f5ac6d2b4eab8a6fbe1bf5528'),
-      (377, 73, 57, 24, 19, 'e53423f11b43bc9508a071e3ccce10d9a004da5244f998d7274c9c3ff38f445a'),
-      (378, 74, 58, 24, 19, 'afce3e3ec8645226b1e0da1bccace2380f04ba016f0264e9a32cea15b4542a15'),
-      (379, 75, 59, 24, 19, 'c989b2ce83aee3e7e67a79222aabbc454f56ce8fe875244b37477cfa12b8fd37'),
-      (380, 76, 60, 24, 19, 'baaa3e1dd4a1ce98f3930bb2322345f89413fdd137440ae33480d33325d78e96'),
-      (381, 77, 61, 24, 19, '121eea3c1a243451f67f7df318f36a19a3be55e99e989f12f8e5c93cfaca448c'),
-      (382, 78, 62, 24, 19, '2d0e1b0f9c5ef4010e2c692b26ed1011df51e49d134b76e312c05840f8788697'),
-      (383, 79, 63, 24, 19, '3631fef95bd88756ac752b603c09aefa596a448642fb6fe84a49e1a2ab873843'),
-      (384, 16, 16, 16, 16, 'c6a693bd324b2bf6c61245e266387123d868d3b4c893e06210236a6e7fb492b6'),
-      (385, 17, 17, 17, 17, '6fab2d0fa3af6206ee7521164eca0425a020fca1d932d03d1907ff2e765266b1'),
-      (386, 18, 18, 18, 18, '5358d3b5a6e12cd06c47a03cd45d97f38eba3d942e23bad348cbeefd47b0a38f'),
-      (387, 19, 19, 19, 19, '825a439320797b0c3b7f8ad7a4fad7fca7d81c34267dd4d8d5cb3ce818799bb2'),
-      (388, 20, 20, 20, 20, 'eedbec1ace83e8a8cda5ea25c0745733b9bc5223db3e6a6af157c53ca2bf5001'),
-      (389, 21, 21, 21, 21, '80ebe768bcc93397d42d65db9bf3484de0de3f377841b9a09852575bc9f26bab'),
-      (390, 22, 22, 22, 22, 'e04271e4ea359d4dfafad17e092e46f94cdcd7dc8f6c5a7eab387aed28da1fb3'),
-      (391, 23, 23, 23, 23, 'e637740293191ade858ad0cfdf26f1622e5eff0c36f1aa98868f703ec5133246'),
-      (392, 24, 24, 24, 24, '6afb3c1f0b11d3f82172ea898bf75096cf0652c3aa86e7692f28541c6d223bea'),
-      (393, 25, 25, 24, 24, 'ddbeb73014c9eab83f427adc00414fe12f76fede7c01cebf390017e9c9842b96'),
-      (394, 26, 26, 24, 24, '0883a67e83d16bfbdd75148c9b69ba4cd44069f6e7d49b3be6ccbc81140ed77f'),
-      (395, 27, 27, 24, 24, '9fd605d489847073073e7ee699b744f4a706136764ece33cef34f93659525e14'),
-      (396, 28, 28, 24, 24, 'cab12173aa6516d84a30b4144251a1504396cc9fb58675efeb2e835687e2a4f6'),
-      (397, 29, 29, 24, 24, '21e3b4b0ce9731d66851eba9e9364206bba12c3f04203c402d5bc84185857051'),
-      (398, 30, 30, 24, 24, '393b78adfa393d79aea7212a3e2ab6965d9b5a4cdb3a7e7d06c45d40c656c80d'),
-      (399, 31, 31, 24, 24, 'fcb2792358621dc05e8c7eb78441fd2be8d83fcd960b6e8650f69efb399567b7'),
-      (400, 32, 32, 24, 24, '6ce89029dcc8cfae7c91561cb555836221b66f197b2bf5b49400fb78f77269fd'),
-      (401, 33, 33, 24, 24, 'a41fb766c9665d724461769aef376d8562ef1a177fe5ff20ecf1e793ac9cd12f'),
-      (402, 34, 34, 24, 24, '537689ec093d9b2fd39c0b01fa174ab012156e2c5e2868e0444e3ef6f194fe90'),
-      (403, 35, 35, 24, 24, '68cd74ab6fec2ff036fd5a704d8a6d334d12c8f4a32a6067d02f4ad1cabc452b'),
-      (404, 36, 36, 24, 24, '68fc2337337ada1ff33a6bbea7f193d9e9ef723e36978e7e2f97bb6fd410d67e'),
-      (405, 37, 37, 24, 24, '9822c8ec32f65715982e7b4ca90c5bbca887a00d920cbe514db86f80a41e2e1f'),
-      (406, 38, 38, 24, 24, '0cb00d667192083496cc02fd732d5f5d659a88a7f6be1249e14b23a7d01e003b'),
-      (407, 39, 39, 24, 24, '93751ab16029b8bd1198cf543de83a4cd24ab704e152ce77c509fdc97ea0c91f'),
-      (408, 40, 40, 24, 24, '09722c7bcae57ccbc93c8394bfd4f8a6e344e63b4fc898a31cff39684b8c72db'),
-      (409, 41, 41, 24, 24, '9dfa26b1155deb340088a30f3f1e5f1dd7c09e4924598e5ebec6d7c677ba24be'),
-      (410, 42, 42, 24, 24, 'c8568d5b8191c1c2cdb47d9dc085f3b27bdd4169af7ea8aad51981eb8df83e1d'),
-      (411, 43, 43, 24, 24, 'c89d717f375e6ce9024b71582cf843e2633f117277ad5ae0ead0d82581901d54'),
-      (412, 44, 44, 24, 24, '5f861a74a4f2cb1fcb60f5906349769effc80a47290cdd9aac7a23a9247c6d1f'),
-      (413, 45, 45, 24, 24, '24efe7fa0c99a48c13a9d14e2253a003da8d09f89e33e698572669e48bbf54ce'),
-      (414, 46, 46, 24, 24, '92bfef2ce7e78f6119665f1537cc51cc55ddfd3ead543cd9127451986afb869f'),
-      (415, 47, 47, 24, 24, 'b01e56f0058b0356c224dcd8db1b9291f1971c65ef219919ba26de536624d5d5'),
-      (416, 48, 48, 24, 24, 'c7ba8903d43074b468edde10956f0da7602cc86cdbdbd374b51464e85459056d'),
-      (417, 49, 49, 24, 24, '511001c6226a41f3fb8f1bd9e38dd638063b27f6bd4dc6ee84c9da13718eb471'),
-      (418, 50, 50, 24, 24, 'd8f96bd525a047d4c82e171dec7cad2c7cbbb23ef1599a9855c24a196c4cb9bf'),
-      (419, 51, 51, 24, 24, '855dfa3c1ea108284ab9bbe124f1119042febbad7fde55395bb85e55744fb89c'),
-      (420, 52, 52, 24, 24, '94814b2ccc0ef271f8aca2f2fcdbd78d80e7d93fb67726714207a0fb5efeb3de'),
-      (421, 53, 53, 24, 24, '13298169dd3107bf8a091bd946e06424f96e2e3e1bffeda5c882c7b4d479e5c8'),
-      (422, 54, 54, 24, 24, '7f4ad8abb65a00f39ac3971fc19d875a0b53f6424c06603f9e582774ea0b59b1'),
-      (423, 55, 55, 24, 24, 'f0c102d463c5b2365e63d9deac1e53cf9998146d1958c6681263905b76946d31'),
-      (424, 56, 56, 24, 24, '601fb4f7b91cde9b0cded40949b1a1a3fdc1d3ea2030f55495982591a9db9f1e'),
-      (425, 57, 57, 24, 24, 'c77a8da76058a207678521fbceaaf85dbf2df597157d7d184c0548a7e711602c'),
-      (426, 58, 58, 24, 24, '9df6845faaee116669c467077d2ec4157315ee5fcaa3b315d5876c9014f3b10d'),
-      (427, 59, 59, 24, 24, 'b35f9b6fb904b23dd9019420dbf75bcb65cb5ecc8c826077158453b1ce96d978'),
-      (428, 60, 60, 24, 24, '2754058cf82cfa982eadb47ad62f5a8074d1c74c8bcb259442852bee12d0463d'),
-      (429, 61, 61, 24, 24, '9540457897d01a2e1b426c5b9453c27db00cabfc1550c09808ce85ecdae1d0bf'),
-      (430, 62, 62, 24, 24, '364b897e4b94826acf244a7810941fa001a214bbf68cd3bf770f68d334de836b'),
-      (431, 63, 63, 24, 24, '16176c09c5082e8bb0e09290e6c13341f24521a91bc01acbf4ee8902c41f0284'),
-      (432, 64, 16, 24, 6, 'ae08a5ac81ccd42cf903d510571de9319f6c039d43268d17838d30954cdf5a96'),
-      (433, 65, 17, 24, 6, '34b56e75ffecbe8087a8237c3f68879a58111dbb2cf4a42d1217d2b4b57f4758'),
-      (434, 66, 18, 24, 7, '510966aa96ec821e868bd8bfb8a2794bf7410fd3164572158ca6ab3d1185c78e'),
-      (435, 67, 19, 24, 7, 'af36a804ef254629fa88e9824d3abcffe2f90dcd302a5c115813455ccb3bde72'),
-      (436, 68, 20, 24, 7, 'd9e1aeed653a3766287c8d8001674a436358e32ee38aa21e3dcd2dec6b4ff37f'),
-      (437, 69, 21, 24, 7, 'cda5c06d08599252496fcc2a22ee6c049b3c131ef81fe2bb2e83320656d7bae2'),
-      (438, 70, 22, 24, 8, '2e81efb54830093ca5fadfd87182f21d73f35a779bf4ea7be872d70ef59057c2'),
-      (439, 71, 23, 24, 8, '42dd232cfaa825d6a641f0c7d8e91fe5db17f9f0d107de763b471ab5b37df1b0'),
-      (440, 72, 24, 24, 8, '0a428696c9be522f7f125eac392284f93e5056b250bd5c627fc5c8ca3d41fc46'),
-      (441, 73, 25, 24, 8, 'c23aa02bdda4efe69bd02c8d70015f00b03c1aeb9bd018a4d797f348dbd3e9b6'),
-      (442, 74, 26, 24, 8, '0c84e91e3ddeabfacec35155f3405d7da5250dbd5cd839246a271ccce1236100'),
-      (443, 75, 27, 24, 9, '1f5857245fc1287c1d0fab69dc1bc785469b3f409fc66840170b61fbbcaaa76f'),
-      (444, 76, 28, 24, 9, 'ad81def98b11558630726e5a44c00d849b2b4fcf79dfadea22abe8558f2ade5d'),
-      (445, 77, 29, 24, 9, 'd885f013a8b50cb3b85ba9e4aa9c97c2663c75108e26997046a2d9f5a1e86c74'),
-      (446, 78, 30, 24, 9, '177c3be799e40dbe54229272a654541b5413041f7cf613bb142e5993a5f5c3b2'),
-      (447, 79, 31, 24, 9, '5f93161f21294a226b42e47e83e3041bdaf8d3948d97fa12d4d2a45f866c5e03'),
-      (448, 16, 32, 12, 24, 'ea7336688d5d5cc5199321d521459742158987b15be6028b981e80f8c629fbf4'),
-      (449, 17, 33, 12, 24, '4fa9716a2c7efa24612a350c9b2fb681e1743838d36aa719897acb33756f13d1'),
-      (450, 18, 34, 13, 24, '6b674e2f1176811b946fda9cf1b181336cb95d4aa91d45ff80a0c17361e0e93e'),
-      (451, 19, 35, 13, 24, 'f1917c6b58b36ce38a89c30cd79b0c30c046eb7014b0d9e9884c5a045987c63a'),
-      (452, 20, 36, 13, 24, '3dff4d378b1dc63869524ef06146091038691a9f47ff2ed9c7aac8de00979831'),
-      (453, 21, 37, 14, 24, 'b6db5cbf8ea20a98cfd8fcbe827937b7da852c6233faade9f794c57a6488a62c'),
-      (454, 22, 38, 14, 24, '3005491509dc6e9e72e20602579741bee419a314bd195430d2daf680ea1cd2c4'),
-      (455, 23, 39, 14, 24, '3e145d278da44efc64070ac7001992239c264a0a6fcf89cf4091fa226a0dc95a'),
-      (456, 24, 40, 14, 24, 'dbb8146aa4dd01b8eb798513211408f6fe2684fa8d0cc913f307756354b8f003'),
-      (457, 25, 41, 15, 24, '76e435077f65b4114c4c8133d62b1e84e521305193fe63a024218a5c0d3acabf'),
-      (458, 26, 42, 15, 24, '4258e783be7c727f4137a08aab74ac427441a69d3b8ace8727fdbde6d0665198'),
-      (459, 27, 43, 15, 24, '20b6a92c3a6f2c1f4b7c0aaf3caa798f38a75ea5fc5dd487096fc462e2b04de0'),
-      (460, 28, 44, 15, 24, '1bb8544dad5bfc6923908a6fcc911f902952a12ed4a4ee083e134272a338ea88'),
-      (461, 29, 45, 15, 24, '131f1146aabbb36df59a51704c1c8133e55e7a5ffda2be5179ace83941f36cf1'),
-      (462, 30, 46, 16, 24, '6c5d963a765bdd36fc55bcb72c7802274e31e33486b557181ad71ebc723c5e87'),
-      (463, 31, 47, 16, 24, '70fea40825a8e3501cb66399b2bf5c1874e66851ad99eebe63ad6f0745b50be9'),
-      (464, 32, 48, 16, 24, 'de5a67a975b970c00b72a768c4355f18a26a5b36b6e2c6ef71fa973eb3134b21'),
-      (465, 33, 49, 16, 24, 'b3aef85807ae9dc756bcc74306811e305058da3e7406821892ba0ac79967af52'),
-      (466, 34, 50, 16, 24, 'd400e1d77b79d9bd2281f7ad098c8fea256d89f5be6ff5017256096910c8e076'),
-      (467, 35, 51, 16, 24, '1f71e68423c9b2f07cfe6983e56113892466bd1377944ba28c24aa9ce4f0d42a'),
-      (468, 36, 52, 17, 24, 'a7edab14ac7a8b58cf48a5adfefa9f4f7fed3cd9274f652e60705792f2fc1580'),
-      (469, 37, 53, 17, 24, '43c899ef4eb4c243c488ede5fc3b55ea8e139a361824ea4547f4820485b0015f'),
-      (470, 38, 54, 17, 24, 'bb9ddd34a46dc47a822d3a4186c282fd1d438009ef470a6597d41b82d75e9c9d'),
-      (471, 39, 55, 17, 24, '0e061ad141aa45d02ec355e125d531307a6118a033b3fed1e9ea7e7cff396b43'),
-      (472, 40, 56, 17, 24, '724909a99f437d4ef753992ea408d8f08d27e684ae2c777abe1bb057d58e26bd'),
-      (473, 41, 57, 17, 24, '7bed7170e09516ea8aba4c2c380ced39642a7ef6870b5fd9d721aa6fcad3c188'),
-      (474, 42, 58, 17, 24, '9c2298d1e33bc566ee8ed0ef3875b89b66568dcfb0e13813521740ad001dbb1b'),
-      (475, 43, 59, 17, 24, '2973e46c3059450953b63e7030a11d23ffc9a16c5ccc252b264e859a776f65a8'),
-      (476, 44, 60, 18, 24, '693129d4a53f630e2b4d832c3a627af31d3e7211693eabf300878fd8ba0f68e1'),
-      (477, 45, 61, 18, 24, 'd4ec3dd1761d4daf850cbe6cad304a4f78c4684adf8a4ea94a5b684d64ad382e'),
-      (478, 46, 62, 18, 24, '9e759ee76bfe1b17982411e7056bf0e84224bd75175c7a26d918173d38d7de9d'),
-      (479, 47, 63, 18, 24, 'f79ddf877ebd7aae11604421b9288081729f6e19bf68a997e0432616f5973b24'),
-      (480, 48, 16, 24, 8, '837e211e4dc40ec564fc95c02a428a6a5f25008ef8eb30d4a711ffb6df43469f'),
-      (481, 49, 17, 24, 8, '8a6bcae275f1e11887baf735e0ce9434535051cc015c1e458271e102436ce25e'),
-      (482, 50, 18, 24, 9, '83d804cbc6fe7273ec1c2b91dbaa04ed3fcaad05cc9f20c783753c8f51e100a0'),
-      (483, 51, 19, 24, 9, '735c2241a36f4a9c6de9adb125151dd84875b1742a5540fa61576568cb1d571d'),
-      (484, 52, 20, 24, 9, '4eaa2e573e25ba55e9cf7f0b839b27c3bf7ca952b44513169fbfe726fa10abce'),
-      (485, 53, 21, 24, 10, '8b606b7c2ac87a73c769682123ef7dd5601fb5fec8b16a863ab3edb4d6d20cd1'),
-      (486, 54, 22, 24, 10, '7bf463ed464b0ad470971aa042cfb389d73bf4dd0edc91f4c83d880ef5663a75'),
-      (487, 55, 23, 24, 10, 'b01ffa1d270b1f8f9606e3d77c0dc94cd4b2a2b7bdbde2e16d329a296ea50670'),
-      (488, 56, 24, 24, 10, '938a43c19b3b204849e85aaad77dab745cb07f5b451e3809e1a78664a76ceb0c'),
-      (489, 57, 25, 24, 11, 'abaa3598630dca26a608932a326fd2e99c9d2a86423f990d81167f9b35e06374'),
-      (490, 58, 26, 24, 11, '2d8aa72f4006d20da48ef18a4f7083fe6ad79cb6c19bb84755790d4861083cdb'),
-      (491, 59, 27, 24, 11, '94ba6cb96a0e22737e0865f730bf74014b10ed653c7157578e17cc40e6af436a'),
-      (492, 60, 28, 24, 11, 'e701a4c0bf50d8f32715f7aa5a9ddd0f99dc2eafff01e42761a98be33bc4bc0b'),
-      (493, 61, 29, 24, 11, '71ef67a16492fe351179a34ecbca823b91fc8fb397bef6227bba816502ec70cb'),
-      (494, 62, 30, 24, 12, 'b2c836a92e1c230bdd7171f81c0437259a796d69c81c87fca84232adc2da837a'),
-      (495, 63, 31, 24, 12, 'ec5cf813d3b52d255f70df1111f3cb8b79b2256f5894dcbc7b9c29d4b78314d9'),
-      (496, 64, 32, 24, 12, '8c1da861bf5887c542d699b7833b96274de5ed5f4da7ee5c9277ec308918bdb5'),
-      (497, 65, 33, 24, 12, '59af7612cc66ff730c91a8b5877ea4fe293b723b36753e1b2e144a60794cb9bc'),
-      (498, 66, 34, 24, 12, 'd0d52b4edd5ecd01ff74ee05c9f2b02293596f90000a0a15a10949eabd3503aa'),
-      (499, 67, 35, 24, 13, '23c00c593d547ddd7b4a9bfdd4d1dcd9e7bca50b8698a39b0a1b8aa388c31f04'),
-    ],
-    149174: [
-      (0, 16, 16, 16, 16, 'c6a693bd324b2bf6c61245e266387123d868d3b4c893e06210236a6e7fb492b6'),
-      (1, 17, 17, 17, 17, '6fab2d0fa3af6206ee7521164eca0425a020fca1d932d03d1907ff2e765266b1'),
-      (2, 18, 18, 18, 18, '5358d3b5a6e12cd06c47a03cd45d97f38eba3d942e23bad348cbeefd47b0a38f'),
-      (3, 19, 19, 19, 19, '825a439320797b0c3b7f8ad7a4fad7fca7d81c34267dd4d8d5cb3ce818799bb2'),
-      (4, 20, 20, 20, 20, 'eedbec1ace83e8a8cda5ea25c0745733b9bc5223db3e6a6af157c53ca2bf5001'),
-      (5, 21, 21, 21, 21, '80ebe768bcc93397d42d65db9bf3484de0de3f377841b9a09852575bc9f26bab'),
-      (6, 22, 22, 22, 22, 'e04271e4ea359d4dfafad17e092e46f94cdcd7dc8f6c5a7eab387aed28da1fb3'),
-      (7, 23, 23, 23, 23, 'e637740293191ade858ad0cfdf26f1622e5eff0c36f1aa98868f703ec5133246'),
-      (8, 24, 24, 24, 24, '6afb3c1f0b11d3f82172ea898bf75096cf0652c3aa86e7692f28541c6d223bea'),
-      (9, 25, 25, 24, 24, 'ddbeb73014c9eab83f427adc00414fe12f76fede7c01cebf390017e9c9842b96'),
-      (10, 26, 26, 24, 24, '0883a67e83d16bfbdd75148c9b69ba4cd44069f6e7d49b3be6ccbc81140ed77f'),
-      (11, 27, 27, 24, 24, '9fd605d489847073073e7ee699b744f4a706136764ece33cef34f93659525e14'),
-      (12, 28, 28, 24, 24, 'cab12173aa6516d84a30b4144251a1504396cc9fb58675efeb2e835687e2a4f6'),
-      (13, 29, 29, 24, 24, '21e3b4b0ce9731d66851eba9e9364206bba12c3f04203c402d5bc84185857051'),
-      (14, 30, 30, 24, 24, '393b78adfa393d79aea7212a3e2ab6965d9b5a4cdb3a7e7d06c45d40c656c80d'),
-      (15, 31, 31, 24, 24, 'fcb2792358621dc05e8c7eb78441fd2be8d83fcd960b6e8650f69efb399567b7'),
-      (16, 32, 32, 24, 24, '6ce89029dcc8cfae7c91561cb555836221b66f197b2bf5b49400fb78f77269fd'),
-      (17, 33, 33, 24, 24, 'a41fb766c9665d724461769aef376d8562ef1a177fe5ff20ecf1e793ac9cd12f'),
-      (18, 34, 34, 24, 24, '537689ec093d9b2fd39c0b01fa174ab012156e2c5e2868e0444e3ef6f194fe90'),
-      (19, 35, 35, 24, 24, '68cd74ab6fec2ff036fd5a704d8a6d334d12c8f4a32a6067d02f4ad1cabc452b'),
-      (20, 36, 36, 24, 24, '68fc2337337ada1ff33a6bbea7f193d9e9ef723e36978e7e2f97bb6fd410d67e'),
-      (21, 37, 37, 24, 24, '9822c8ec32f65715982e7b4ca90c5bbca887a00d920cbe514db86f80a41e2e1f'),
-      (22, 38, 38, 24, 24, '0cb00d667192083496cc02fd732d5f5d659a88a7f6be1249e14b23a7d01e003b'),
-      (23, 39, 39, 24, 24, '93751ab16029b8bd1198cf543de83a4cd24ab704e152ce77c509fdc97ea0c91f'),
-      (24, 40, 40, 24, 24, '09722c7bcae57ccbc93c8394bfd4f8a6e344e63b4fc898a31cff39684b8c72db'),
-      (25, 41, 41, 24, 24, '9dfa26b1155deb340088a30f3f1e5f1dd7c09e4924598e5ebec6d7c677ba24be'),
-      (26, 42, 42, 24, 24, 'c8568d5b8191c1c2cdb47d9dc085f3b27bdd4169af7ea8aad51981eb8df83e1d'),
-      (27, 43, 43, 24, 24, 'c89d717f375e6ce9024b71582cf843e2633f117277ad5ae0ead0d82581901d54'),
-      (28, 44, 44, 24, 24, '5f861a74a4f2cb1fcb60f5906349769effc80a47290cdd9aac7a23a9247c6d1f'),
-      (29, 45, 45, 24, 24, '24efe7fa0c99a48c13a9d14e2253a003da8d09f89e33e698572669e48bbf54ce'),
-      (30, 46, 46, 24, 24, '92bfef2ce7e78f6119665f1537cc51cc55ddfd3ead543cd9127451986afb869f'),
-      (31, 47, 47, 24, 24, 'b01e56f0058b0356c224dcd8db1b9291f1971c65ef219919ba26de536624d5d5'),
-      (32, 48, 48, 24, 24, 'c7ba8903d43074b468edde10956f0da7602cc86cdbdbd374b51464e85459056d'),
-      (33, 49, 49, 24, 24, '511001c6226a41f3fb8f1bd9e38dd638063b27f6bd4dc6ee84c9da13718eb471'),
-      (34, 50, 50, 24, 24, 'd8f96bd525a047d4c82e171dec7cad2c7cbbb23ef1599a9855c24a196c4cb9bf'),
-      (35, 51, 51, 24, 24, '855dfa3c1ea108284ab9bbe124f1119042febbad7fde55395bb85e55744fb89c'),
-      (36, 52, 52, 24, 24, '94814b2ccc0ef271f8aca2f2fcdbd78d80e7d93fb67726714207a0fb5efeb3de'),
-      (37, 53, 53, 24, 24, '13298169dd3107bf8a091bd946e06424f96e2e3e1bffeda5c882c7b4d479e5c8'),
-      (38, 54, 54, 24, 24, '7f4ad8abb65a00f39ac3971fc19d875a0b53f6424c06603f9e582774ea0b59b1'),
-      (39, 55, 55, 24, 24, 'f0c102d463c5b2365e63d9deac1e53cf9998146d1958c6681263905b76946d31'),
-      (40, 56, 56, 24, 24, '601fb4f7b91cde9b0cded40949b1a1a3fdc1d3ea2030f55495982591a9db9f1e'),
-      (41, 57, 57, 24, 24, 'c77a8da76058a207678521fbceaaf85dbf2df597157d7d184c0548a7e711602c'),
-      (42, 58, 58, 24, 24, '9df6845faaee116669c467077d2ec4157315ee5fcaa3b315d5876c9014f3b10d'),
-      (43, 59, 59, 24, 24, 'b35f9b6fb904b23dd9019420dbf75bcb65cb5ecc8c826077158453b1ce96d978'),
-      (44, 60, 60, 24, 24, '2754058cf82cfa982eadb47ad62f5a8074d1c74c8bcb259442852bee12d0463d'),
-      (45, 61, 61, 24, 24, '9540457897d01a2e1b426c5b9453c27db00cabfc1550c09808ce85ecdae1d0bf'),
-      (46, 62, 62, 24, 24, '364b897e4b94826acf244a7810941fa001a214bbf68cd3bf770f68d334de836b'),
-      (47, 63, 63, 24, 24, '16176c09c5082e8bb0e09290e6c13341f24521a91bc01acbf4ee8902c41f0284'),
-      (48, 64, 16, 24, 6, 'ae08a5ac81ccd42cf903d510571de9319f6c039d43268d17838d30954cdf5a96'),
-      (49, 65, 17, 24, 6, '34b56e75ffecbe8087a8237c3f68879a58111dbb2cf4a42d1217d2b4b57f4758'),
-      (50, 66, 18, 24, 7, '510966aa96ec821e868bd8bfb8a2794bf7410fd3164572158ca6ab3d1185c78e'),
-      (51, 67, 19, 24, 7, 'af36a804ef254629fa88e9824d3abcffe2f90dcd302a5c115813455ccb3bde72'),
-      (52, 68, 20, 24, 7, 'd9e1aeed653a3766287c8d8001674a436358e32ee38aa21e3dcd2dec6b4ff37f'),
-      (53, 69, 21, 24, 7, 'cda5c06d08599252496fcc2a22ee6c049b3c131ef81fe2bb2e83320656d7bae2'),
-      (54, 70, 22, 24, 8, '2e81efb54830093ca5fadfd87182f21d73f35a779bf4ea7be872d70ef59057c2'),
-      (55, 71, 23, 24, 8, '42dd232cfaa825d6a641f0c7d8e91fe5db17f9f0d107de763b471ab5b37df1b0'),
-      (56, 72, 24, 24, 8, '0a428696c9be522f7f125eac392284f93e5056b250bd5c627fc5c8ca3d41fc46'),
-      (57, 73, 25, 24, 8, 'c23aa02bdda4efe69bd02c8d70015f00b03c1aeb9bd018a4d797f348dbd3e9b6'),
-      (58, 74, 26, 24, 8, '0c84e91e3ddeabfacec35155f3405d7da5250dbd5cd839246a271ccce1236100'),
-      (59, 75, 27, 24, 9, '1f5857245fc1287c1d0fab69dc1bc785469b3f409fc66840170b61fbbcaaa76f'),
-      (60, 76, 28, 24, 9, 'ad81def98b11558630726e5a44c00d849b2b4fcf79dfadea22abe8558f2ade5d'),
-      (61, 77, 29, 24, 9, 'd885f013a8b50cb3b85ba9e4aa9c97c2663c75108e26997046a2d9f5a1e86c74'),
-      (62, 78, 30, 24, 9, '177c3be799e40dbe54229272a654541b5413041f7cf613bb142e5993a5f5c3b2'),
-      (63, 79, 31, 24, 9, '5f93161f21294a226b42e47e83e3041bdaf8d3948d97fa12d4d2a45f866c5e03'),
-      (64, 16, 32, 12, 24, 'ea7336688d5d5cc5199321d521459742158987b15be6028b981e80f8c629fbf4'),
-      (65, 17, 33, 12, 24, '4fa9716a2c7efa24612a350c9b2fb681e1743838d36aa719897acb33756f13d1'),
-      (66, 18, 34, 13, 24, '6b674e2f1176811b946fda9cf1b181336cb95d4aa91d45ff80a0c17361e0e93e'),
-      (67, 19, 35, 13, 24, 'f1917c6b58b36ce38a89c30cd79b0c30c046eb7014b0d9e9884c5a045987c63a'),
-      (68, 20, 36, 13, 24, '3dff4d378b1dc63869524ef06146091038691a9f47ff2ed9c7aac8de00979831'),
-      (69, 21, 37, 14, 24, 'b6db5cbf8ea20a98cfd8fcbe827937b7da852c6233faade9f794c57a6488a62c'),
-      (70, 22, 38, 14, 24, '3005491509dc6e9e72e20602579741bee419a314bd195430d2daf680ea1cd2c4'),
-      (71, 23, 39, 14, 24, '3e145d278da44efc64070ac7001992239c264a0a6fcf89cf4091fa226a0dc95a'),
-      (72, 24, 40, 14, 24, 'dbb8146aa4dd01b8eb798513211408f6fe2684fa8d0cc913f307756354b8f003'),
-      (73, 25, 41, 15, 24, '76e435077f65b4114c4c8133d62b1e84e521305193fe63a024218a5c0d3acabf'),
-      (74, 26, 42, 15, 24, '4258e783be7c727f4137a08aab74ac427441a69d3b8ace8727fdbde6d0665198'),
-      (75, 27, 43, 15, 24, '20b6a92c3a6f2c1f4b7c0aaf3caa798f38a75ea5fc5dd487096fc462e2b04de0'),
-      (76, 28, 44, 15, 24, '1bb8544dad5bfc6923908a6fcc911f902952a12ed4a4ee083e134272a338ea88'),
-      (77, 29, 45, 15, 24, '131f1146aabbb36df59a51704c1c8133e55e7a5ffda2be5179ace83941f36cf1'),
-      (78, 30, 46, 16, 24, '6c5d963a765bdd36fc55bcb72c7802274e31e33486b557181ad71ebc723c5e87'),
-      (79, 31, 47, 16, 24, '70fea40825a8e3501cb66399b2bf5c1874e66851ad99eebe63ad6f0745b50be9'),
-      (80, 32, 48, 16, 24, 'de5a67a975b970c00b72a768c4355f18a26a5b36b6e2c6ef71fa973eb3134b21'),
-      (81, 33, 49, 16, 24, 'b3aef85807ae9dc756bcc74306811e305058da3e7406821892ba0ac79967af52'),
-      (82, 34, 50, 16, 24, 'd400e1d77b79d9bd2281f7ad098c8fea256d89f5be6ff5017256096910c8e076'),
-      (83, 35, 51, 16, 24, '1f71e68423c9b2f07cfe6983e56113892466bd1377944ba28c24aa9ce4f0d42a'),
-      (84, 36, 52, 17, 24, 'a7edab14ac7a8b58cf48a5adfefa9f4f7fed3cd9274f652e60705792f2fc1580'),
-      (85, 37, 53, 17, 24, '43c899ef4eb4c243c488ede5fc3b55ea8e139a361824ea4547f4820485b0015f'),
-      (86, 38, 54, 17, 24, 'bb9ddd34a46dc47a822d3a4186c282fd1d438009ef470a6597d41b82d75e9c9d'),
-      (87, 39, 55, 17, 24, '0e061ad141aa45d02ec355e125d531307a6118a033b3fed1e9ea7e7cff396b43'),
-      (88, 40, 56, 17, 24, '724909a99f437d4ef753992ea408d8f08d27e684ae2c777abe1bb057d58e26bd'),
-      (89, 41, 57, 17, 24, '7bed7170e09516ea8aba4c2c380ced39642a7ef6870b5fd9d721aa6fcad3c188'),
-      (90, 42, 58, 17, 24, '9c2298d1e33bc566ee8ed0ef3875b89b66568dcfb0e13813521740ad001dbb1b'),
-      (91, 43, 59, 17, 24, '2973e46c3059450953b63e7030a11d23ffc9a16c5ccc252b264e859a776f65a8'),
-      (92, 44, 60, 18, 24, '693129d4a53f630e2b4d832c3a627af31d3e7211693eabf300878fd8ba0f68e1'),
-      (93, 45, 61, 18, 24, 'd4ec3dd1761d4daf850cbe6cad304a4f78c4684adf8a4ea94a5b684d64ad382e'),
-      (94, 46, 62, 18, 24, '9e759ee76bfe1b17982411e7056bf0e84224bd75175c7a26d918173d38d7de9d'),
-      (95, 47, 63, 18, 24, 'f79ddf877ebd7aae11604421b9288081729f6e19bf68a997e0432616f5973b24'),
-      (96, 48, 16, 24, 8, '837e211e4dc40ec564fc95c02a428a6a5f25008ef8eb30d4a711ffb6df43469f'),
-      (97, 49, 17, 24, 8, '8a6bcae275f1e11887baf735e0ce9434535051cc015c1e458271e102436ce25e'),
-      (98, 50, 18, 24, 9, '83d804cbc6fe7273ec1c2b91dbaa04ed3fcaad05cc9f20c783753c8f51e100a0'),
-      (99, 51, 19, 24, 9, '735c2241a36f4a9c6de9adb125151dd84875b1742a5540fa61576568cb1d571d'),
-      (100, 52, 20, 24, 9, '4eaa2e573e25ba55e9cf7f0b839b27c3bf7ca952b44513169fbfe726fa10abce'),
-      (101, 53, 21, 24, 10, '8b606b7c2ac87a73c769682123ef7dd5601fb5fec8b16a863ab3edb4d6d20cd1'),
-      (102, 54, 22, 24, 10, '7bf463ed464b0ad470971aa042cfb389d73bf4dd0edc91f4c83d880ef5663a75'),
-      (103, 55, 23, 24, 10, 'b01ffa1d270b1f8f9606e3d77c0dc94cd4b2a2b7bdbde2e16d329a296ea50670'),
-      (104, 56, 24, 24, 10, '938a43c19b3b204849e85aaad77dab745cb07f5b451e3809e1a78664a76ceb0c'),
-      (105, 57, 25, 24, 11, 'abaa3598630dca26a608932a326fd2e99c9d2a86423f990d81167f9b35e06374'),
-      (106, 58, 26, 24, 11, '2d8aa72f4006d20da48ef18a4f7083fe6ad79cb6c19bb84755790d4861083cdb'),
-      (107, 59, 27, 24, 11, '94ba6cb96a0e22737e0865f730bf74014b10ed653c7157578e17cc40e6af436a'),
-      (108, 60, 28, 24, 11, 'e701a4c0bf50d8f32715f7aa5a9ddd0f99dc2eafff01e42761a98be33bc4bc0b'),
-      (109, 61, 29, 24, 11, '71ef67a16492fe351179a34ecbca823b91fc8fb397bef6227bba816502ec70cb'),
-      (110, 62, 30, 24, 12, 'b2c836a92e1c230bdd7171f81c0437259a796d69c81c87fca84232adc2da837a'),
-      (111, 63, 31, 24, 12, 'ec5cf813d3b52d255f70df1111f3cb8b79b2256f5894dcbc7b9c29d4b78314d9'),
-      (112, 64, 32, 24, 12, '8c1da861bf5887c542d699b7833b96274de5ed5f4da7ee5c9277ec308918bdb5'),
-      (113, 65, 33, 24, 12, '59af7612cc66ff730c91a8b5877ea4fe293b723b36753e1b2e144a60794cb9bc'),
-      (114, 66, 34, 24, 12, 'd0d52b4edd5ecd01ff74ee05c9f2b02293596f90000a0a15a10949eabd3503aa'),
-      (115, 67, 35, 24, 13, '23c00c593d547ddd7b4a9bfdd4d1dcd9e7bca50b8698a39b0a1b8aa388c31f04'),
-      (116, 68, 36, 24, 13, '45220bed60d3ef7bbe1d0f47c0196b338acee2465be298d5d7277e5b0238e966'),
-      (117, 69, 37, 24, 13, 'd914f145f1fa43ac6a7c481238ca25fe1bd2682d4294bbb506f894ae6135074b'),
-      (118, 70, 38, 24, 13, 'f06d02f46f667cb93f4581b27a472b9d79e326e09d9b289ca2bdc53543e25542'),
-      (119, 71, 39, 24, 13, '4cb19fbedb0cb3b862c93337c9596e5df66def960c38881245dae2ebb0c7344d'),
-      (120, 72, 40, 24, 13, 'b472639e03608ae60e6428f68f695f97a5f6a53af3411d288eb5075be98b2a6a'),
-      (121, 73, 41, 24, 13, '9be4233c61b3de4494ae55b3934573c29cb302ad2b5feed6a92c6ec6c1732ab4'),
-      (122, 74, 42, 24, 14, '8393df7be6502d823f8dfe9535c655c438f785c8b836e6bc3ba11ea858df6c05'),
-      (123, 75, 43, 24, 14, '41666171425632731cdaa5da7db51912a6291ec296b1025fe544b06bc0ba0284'),
-      (124, 76, 44, 24, 14, '6aa70b09bc10cd2fd591099fd0cad1f4c5ce40e1ded062db8eb794914ccd3969'),
-      (125, 77, 45, 24, 14, '65b3580b959e53b15c92ea5b324770a3f3402d1447d2b8098bf67dd1d9a1c056'),
-      (126, 78, 46, 24, 14, '0bbbd35e7a9873e2a95354d2c72d263224a4fb32d60ec18ece423d313832f810'),
-      (127, 79, 47, 24, 14, 'c092ede57738b87e8e0192896bc85b979d5b57e927f522d89d50ba9bef7e9c71'),
-      (128, 16, 48, 8, 24, '8d4b8f8db946fe08b5d8a4d1f65654d8fe036867e82e7b92723476ee05a75eea'),
-      (129, 17, 49, 8, 24, '4d884c83b00804842d68b0fc5c7191369a87974e75d541a3adb47f82dc00a49f'),
-      (130, 18, 50, 9, 24, 'c22970988d7d39ea73b30b2edf0eee9dd51cfb1a89c8aecf69513d6d451068ac'),
-      (131, 19, 51, 9, 24, '46b645ad19fcda98b735afc7344c6a67b0a4a012ffc19679a89332c8e0551d4c'),
-      (132, 20, 52, 9, 24, 'd4c757ed63baae93185cfcb3e85644bcc6e0898076962d490c2ea721b720912f'),
-      (133, 21, 53, 10, 24, '659f917d1c6eb03bf808c2795d094a58c98a689407086814e88468d6bfc98fc9'),
-      (134, 22, 54, 10, 24, '54357276af382b77f71f539096c07166f05f97865cd8c2ce8029169161e0c3a2'),
-      (135, 23, 55, 10, 24, '2c788358b19aad82be0e17f686d227bfd0b433e722679030b59ccc54b2637deb'),
-      (136, 24, 56, 10, 24, 'bb9319470dcff993f99b1855ede4f3978b0c29543967ec7f39fa9d2effa9f031'),
-      (137, 25, 57, 11, 24, '7a91701064928c129ae31890cac5ccc6326edab69d07be91c15d04fd6fa44e6c'),
-      (138, 26, 58, 11, 24, 'f34a3e32969a564233676d206e7d7b871ff79c4281879389af631a7f860a547a'),
-      (139, 27, 59, 11, 24, 'c0c5e48bf98e14068a269bec608655bf9a70399bd0b6cd31be3c4f52abfb7d66'),
-      (140, 28, 60, 11, 24, 'af4e4d8ef3a403110eafdc411e160d01759047fef1b4737f52b063d06794545f'),
-      (141, 29, 61, 11, 24, '0b6359c43e676c1fb0ee4dac86812f29a5d3dbeb716ff13d8087a14161f7eef0'),
-      (142, 30, 62, 12, 24, 'c58d34076a3c117bc86558e7552794ceb23c93c4f1148608f318fdee256ec3e6'),
-      (143, 31, 63, 12, 24, 'ff308bede1ce3d132e0d6d05faa53062ca9aabc0ac9811a242b0a6f364d24b3b'),
-      (144, 32, 16, 24, 12, 'a5cad7d0ed3ed63d28701841930716d2afdc11204fa003507458be4d8aa01be7'),
-      (145, 33, 17, 24, 12, 'e9d0987f0a1fb3a8a8bba232f70bf5fd8600dad112fd140c37eb6e37f3360727'),
-      (146, 34, 18, 24, 13, '4a5441e1a195840c430cfe1fccbd7bbedc1d0de8e566ac02d3b50c1cdd963202'),
-      (147, 35, 19, 24, 13, 'a7cf992ca8c5dc7c3ed79e844968ce8f0b88c095725a0850eb7a838b4e777e46'),
-      (148, 36, 20, 24, 13, '0306f0c4952e54d7ab0c108f02f1e2fef46f9b571e91f0710601ea60831ebf1f'),
-      (149, 37, 21, 24, 14, '9eadb049ca1ec8a5dde6a917e12dd5c2b802aec7b8afd27a73d22f6d0ab966cb'),
-      (150, 38, 22, 24, 14, '8b2fabe0cab133f3995900c7667968597d443ea2c2cc9d4ea37a55029b1d79d2'),
-      (151, 39, 23, 24, 14, '6a19871d3d18c6b9a24e5af6037e00adc4fc9bf7baa58fb893275d2127916f64'),
-      (152, 40, 24, 24, 14, '8fd3c38ab99acc8803f2c1891857256e3ba1c9504d4a8d80fd50f061a8ccff1b'),
-      (153, 41, 25, 24, 15, 'efd9f7fb655b5c2f9844e1dfbc02ec362f0d333538064a1a21a474fa40c4cd68'),
-      (154, 42, 26, 24, 15, '60c8f070b74f2c424d700763acf271a8494726902c6712ff60db965548b746c5'),
-      (155, 43, 27, 24, 15, '5032334ab8470ea1bf3fce15ee0800648398cf49307a437ace3fdd330550443f'),
-      (156, 44, 28, 24, 15, '2e8a97079cf707a961e3dc3b25c3c676bd707b4464a2b14e7bbaac44d62eb27f'),
-      (157, 45, 29, 24, 15, '8f1ffbdcf9ce319e4d98d7fb6b294bcebde4c042244b8d2373213b6aa8e820bb'),
-      (158, 46, 30, 24, 16, 'e3aee19c1dbf13390b98cbf8c841fe3e13c160b39aba396ec3743ac2dc56e492'),
-      (159, 47, 31, 24, 16, '106ffe3c69f25e777a4d3d3533d9b82aa0435851b92c7bd204553c603ce03844'),
-      (160, 48, 32, 24, 16, 'b814a18cf99c7acd328508676b95e5705837fc4ceff527c55bb89d30e217f4a1'),
-      (161, 49, 33, 24, 16, '06da26174b9232e5ee2631af4a73125a3f77dec3f83190c10164643f8b769fc1'),
-      (162, 50, 34, 24, 16, 'd6ae1be1f1d521c4b74420f35dcdfd69ac991423050d900a60c3e4c5e2bb8f6f'),
-      (163, 51, 35, 24, 16, '77e79e9268935bcff1016363d1347eeeb5dfd9dd52d34fdfd80df5d20e773844'),
-      (164, 52, 36, 24, 17, 'b5cfaea2fb249ea85cfdbc20dbca412e360def6e055d77a13c4ff679928ccb82'),
-      (165, 53, 37, 24, 17, '05f843011f28d491d8686850ac309c8f2de3a8c979244d66c7f3f4da1fce34c9'),
-      (166, 54, 38, 24, 17, 'e09c44dd8d8bd94c4b165387cb9cec7b3e61dcc8f89e5dfa12477388bbdf7a69'),
-      (167, 55, 39, 24, 17, 'c658f322ca42daa354227fb965c096f66b54192e39769a0a8e37d87f0a6e1f39'),
-      (168, 56, 40, 24, 17, '2090714e3d7018405f4b98fbe25164e1fd380c107f335d3fbeb9817d16f41210'),
-      (169, 57, 41, 24, 17, 'd384a75cb00e0a544448fa6b6e29e986db7e59ba0929fcde6ee2f2b51ff89dbf'),
-      (170, 58, 42, 24, 17, 'f8c21524b5ae407bb16f3962c192edeb551c27e3d5d8c337edbe0ee7e3bd3cdb'),
-      (171, 59, 43, 24, 17, 'fedb67f198aea0858b563c89c50421e31a53d471f7488cab0ee30b023123ae1d'),
-      (172, 60, 44, 24, 18, '9b06832a4d7a20b81e7f44eaf407bc5150380b4b208835f990deb92738695e55'),
-      (173, 61, 45, 24, 18, 'b53f528922d32c36d39e316582e7190695eebd71133c736b5889dbf1a9919017'),
-      (174, 62, 46, 24, 18, '34d53494120aa9f5aee17a825f13acac9a49c9e79568677b21008f9f62feb336'),
-      (175, 63, 47, 24, 18, '35e3b18c94d2c4618224cefc735f9a30754cf543f4fe60a679c224b54d4737fd'),
-      (176, 64, 48, 24, 18, '9aa8336bce927edde8bbd5e29bb1a254a6cf5cc2e01b88946a6a202e849d7178'),
-      (177, 65, 49, 24, 18, 'e4b5644d8bd02a4538e72e1f0e182f95b9ac76d5cdd63a1b40c7f2fd7f1c23c5'),
-      (178, 66, 50, 24, 18, 'f1d037f9feea0b92e69a6ce02555d61d8f625131ac124eb5e85a81261ff42a91'),
-      (179, 67, 51, 24, 18, '04ef5553fd8bcef02e2e0e06799e6a6fad8bb3784de10644884336a210737512'),
-      (180, 68, 52, 24, 18, '053d96e0b9f1d6ef3444a0ed55d4fda2cd973eb0bc1afa66de42afb3858c4466'),
-      (181, 69, 53, 24, 18, '948c9c3afb23db86c461afdc5b768e463beec8d9e5fe54e0ef21426bdc374ed1'),
-      (182, 70, 54, 24, 19, '16364d4876e4b5dba3a3188b17e67eb81bcd3f0a1adc6ab162f8683b71b6d4b0'),
-      (183, 71, 55, 24, 19, '223ed090dc4e5b9b015983b237be92f5db55755d8f613f3f885680ed3d1acf3d'),
-      (184, 72, 56, 24, 19, '64afd31f1416ce95b2569b80391e4bfeafba408f5ac6d2b4eab8a6fbe1bf5528'),
-      (185, 73, 57, 24, 19, 'e53423f11b43bc9508a071e3ccce10d9a004da5244f998d7274c9c3ff38f445a'),
-      (186, 74, 58, 24, 19, 'afce3e3ec8645226b1e0da1bccace2380f04ba016f0264e9a32cea15b4542a15'),
-      (187, 75, 59, 24, 19, 'c989b2ce83aee3e7e67a79222aabbc454f56ce8fe875244b37477cfa12b8fd37'),
-      (188, 76, 60, 24, 19, 'baaa3e1dd4a1ce98f3930bb2322345f89413fdd137440ae33480d33325d78e96'),
-      (189, 77, 61, 24, 19, '121eea3c1a243451f67f7df318f36a19a3be55e99e989f12f8e5c93cfaca448c'),
-      (190, 78, 62, 24, 19, '2d0e1b0f9c5ef4010e2c692b26ed1011df51e49d134b76e312c05840f8788697'),
-      (191, 79, 63, 24, 19, '3631fef95bd88756ac752b603c09aefa596a448642fb6fe84a49e1a2ab873843'),
-      (192, 16, 16, 16, 16, 'c6a693bd324b2bf6c61245e266387123d868d3b4c893e06210236a6e7fb492b6'),
-      (193, 17, 17, 17, 17, '6fab2d0fa3af6206ee7521164eca0425a020fca1d932d03d1907ff2e765266b1'),
-      (194, 18, 18, 18, 18, '5358d3b5a6e12cd06c47a03cd45d97f38eba3d942e23bad348cbeefd47b0a38f'),
-      (195, 19, 19, 19, 19, '825a439320797b0c3b7f8ad7a4fad7fca7d81c34267dd4d8d5cb3ce818799bb2'),
-      (196, 20, 20, 20, 20, 'eedbec1ace83e8a8cda5ea25c0745733b9bc5223db3e6a6af157c53ca2bf5001'),
-      (197, 21, 21, 21, 21, '80ebe768bcc93397d42d65db9bf3484de0de3f377841b9a09852575bc9f26bab'),
-      (198, 22, 22, 22, 22, 'e04271e4ea359d4dfafad17e092e46f94cdcd7dc8f6c5a7eab387aed28da1fb3'),
-      (199, 23, 23, 23, 23, 'e637740293191ade858ad0cfdf26f1622e5eff0c36f1aa98868f703ec5133246'),
-      (200, 24, 24, 24, 24, '6afb3c1f0b11d3f82172ea898bf75096cf0652c3aa86e7692f28541c6d223bea'),
-      (201, 25, 25, 24, 24, 'ddbeb73014c9eab83f427adc00414fe12f76fede7c01cebf390017e9c9842b96'),
-      (202, 26, 26, 24, 24, '0883a67e83d16bfbdd75148c9b69ba4cd44069f6e7d49b3be6ccbc81140ed77f'),
-      (203, 27, 27, 24, 24, '9fd605d489847073073e7ee699b744f4a706136764ece33cef34f93659525e14'),
-      (204, 28, 28, 24, 24, 'cab12173aa6516d84a30b4144251a1504396cc9fb58675efeb2e835687e2a4f6'),
-      (205, 29, 29, 24, 24, '21e3b4b0ce9731d66851eba9e9364206bba12c3f04203c402d5bc84185857051'),
-      (206, 30, 30, 24, 24, '393b78adfa393d79aea7212a3e2ab6965d9b5a4cdb3a7e7d06c45d40c656c80d'),
-      (207, 31, 31, 24, 24, 'fcb2792358621dc05e8c7eb78441fd2be8d83fcd960b6e8650f69efb399567b7'),
-      (208, 32, 32, 24, 24, '6ce89029dcc8cfae7c91561cb555836221b66f197b2bf5b49400fb78f77269fd'),
-      (209, 33, 33, 24, 24, 'a41fb766c9665d724461769aef376d8562ef1a177fe5ff20ecf1e793ac9cd12f'),
-      (210, 34, 34, 24, 24, '537689ec093d9b2fd39c0b01fa174ab012156e2c5e2868e0444e3ef6f194fe90'),
-      (211, 35, 35, 24, 24, '68cd74ab6fec2ff036fd5a704d8a6d334d12c8f4a32a6067d02f4ad1cabc452b'),
-      (212, 36, 36, 24, 24, '68fc2337337ada1ff33a6bbea7f193d9e9ef723e36978e7e2f97bb6fd410d67e'),
-      (213, 37, 37, 24, 24, '9822c8ec32f65715982e7b4ca90c5bbca887a00d920cbe514db86f80a41e2e1f'),
-      (214, 38, 38, 24, 24, '0cb00d667192083496cc02fd732d5f5d659a88a7f6be1249e14b23a7d01e003b'),
-      (215, 39, 39, 24, 24, '93751ab16029b8bd1198cf543de83a4cd24ab704e152ce77c509fdc97ea0c91f'),
-      (216, 40, 40, 24, 24, '09722c7bcae57ccbc93c8394bfd4f8a6e344e63b4fc898a31cff39684b8c72db'),
-      (217, 41, 41, 24, 24, '9dfa26b1155deb340088a30f3f1e5f1dd7c09e4924598e5ebec6d7c677ba24be'),
-      (218, 42, 42, 24, 24, 'c8568d5b8191c1c2cdb47d9dc085f3b27bdd4169af7ea8aad51981eb8df83e1d'),
-      (219, 43, 43, 24, 24, 'c89d717f375e6ce9024b71582cf843e2633f117277ad5ae0ead0d82581901d54'),
-      (220, 44, 44, 24, 24, '5f861a74a4f2cb1fcb60f5906349769effc80a47290cdd9aac7a23a9247c6d1f'),
-      (221, 45, 45, 24, 24, '24efe7fa0c99a48c13a9d14e2253a003da8d09f89e33e698572669e48bbf54ce'),
-      (222, 46, 46, 24, 24, '92bfef2ce7e78f6119665f1537cc51cc55ddfd3ead543cd9127451986afb869f'),
-      (223, 47, 47, 24, 24, 'b01e56f0058b0356c224dcd8db1b9291f1971c65ef219919ba26de536624d5d5'),
-      (224, 48, 48, 24, 24, 'c7ba8903d43074b468edde10956f0da7602cc86cdbdbd374b51464e85459056d'),
-      (225, 49, 49, 24, 24, '511001c6226a41f3fb8f1bd9e38dd638063b27f6bd4dc6ee84c9da13718eb471'),
-      (226, 50, 50, 24, 24, 'd8f96bd525a047d4c82e171dec7cad2c7cbbb23ef1599a9855c24a196c4cb9bf'),
-      (227, 51, 51, 24, 24, '855dfa3c1ea108284ab9bbe124f1119042febbad7fde55395bb85e55744fb89c'),
-      (228, 52, 52, 24, 24, '94814b2ccc0ef271f8aca2f2fcdbd78d80e7d93fb67726714207a0fb5efeb3de'),
-      (229, 53, 53, 24, 24, '13298169dd3107bf8a091bd946e06424f96e2e3e1bffeda5c882c7b4d479e5c8'),
-      (230, 54, 54, 24, 24, '7f4ad8abb65a00f39ac3971fc19d875a0b53f6424c06603f9e582774ea0b59b1'),
-      (231, 55, 55, 24, 24, 'f0c102d463c5b2365e63d9deac1e53cf9998146d1958c6681263905b76946d31'),
-      (232, 56, 56, 24, 24, '601fb4f7b91cde9b0cded40949b1a1a3fdc1d3ea2030f55495982591a9db9f1e'),
-      (233, 57, 57, 24, 24, 'c77a8da76058a207678521fbceaaf85dbf2df597157d7d184c0548a7e711602c'),
-      (234, 58, 58, 24, 24, '9df6845faaee116669c467077d2ec4157315ee5fcaa3b315d5876c9014f3b10d'),
-      (235, 59, 59, 24, 24, 'b35f9b6fb904b23dd9019420dbf75bcb65cb5ecc8c826077158453b1ce96d978'),
-      (236, 60, 60, 24, 24, '2754058cf82cfa982eadb47ad62f5a8074d1c74c8bcb259442852bee12d0463d'),
-      (237, 61, 61, 24, 24, '9540457897d01a2e1b426c5b9453c27db00cabfc1550c09808ce85ecdae1d0bf'),
-      (238, 62, 62, 24, 24, '364b897e4b94826acf244a7810941fa001a214bbf68cd3bf770f68d334de836b'),
-      (239, 63, 63, 24, 24, '16176c09c5082e8bb0e09290e6c13341f24521a91bc01acbf4ee8902c41f0284'),
-      (240, 64, 16, 24, 6, 'ae08a5ac81ccd42cf903d510571de9319f6c039d43268d17838d30954cdf5a96'),
-      (241, 65, 17, 24, 6, '34b56e75ffecbe8087a8237c3f68879a58111dbb2cf4a42d1217d2b4b57f4758'),
-      (242, 66, 18, 24, 7, '510966aa96ec821e868bd8bfb8a2794bf7410fd3164572158ca6ab3d1185c78e'),
-      (243, 67, 19, 24, 7, 'af36a804ef254629fa88e9824d3abcffe2f90dcd302a5c115813455ccb3bde72'),
-      (244, 68, 20, 24, 7, 'd9e1aeed653a3766287c8d8001674a436358e32ee38aa21e3dcd2dec6b4ff37f'),
-      (245, 69, 21, 24, 7, 'cda5c06d08599252496fcc2a22ee6c049b3c131ef81fe2bb2e83320656d7bae2'),
-      (246, 70, 22, 24, 8, '2e81efb54830093ca5fadfd87182f21d73f35a779bf4ea7be872d70ef59057c2'),
-      (247, 71, 23, 24, 8, '42dd232cfaa825d6a641f0c7d8e91fe5db17f9f0d107de763b471ab5b37df1b0'),
-      (248, 72, 24, 24, 8, '0a428696c9be522f7f125eac392284f93e5056b250bd5c627fc5c8ca3d41fc46'),
-      (249, 73, 25, 24, 8, 'c23aa02bdda4efe69bd02c8d70015f00b03c1aeb9bd018a4d797f348dbd3e9b6'),
-      (250, 74, 26, 24, 8, '0c84e91e3ddeabfacec35155f3405d7da5250dbd5cd839246a271ccce1236100'),
-      (251, 75, 27, 24, 9, '1f5857245fc1287c1d0fab69dc1bc785469b3f409fc66840170b61fbbcaaa76f'),
-      (252, 76, 28, 24, 9, 'ad81def98b11558630726e5a44c00d849b2b4fcf79dfadea22abe8558f2ade5d'),
-      (253, 77, 29, 24, 9, 'd885f013a8b50cb3b85ba9e4aa9c97c2663c75108e26997046a2d9f5a1e86c74'),
-      (254, 78, 30, 24, 9, '177c3be799e40dbe54229272a654541b5413041f7cf613bb142e5993a5f5c3b2'),
-      (255, 79, 31, 24, 9, '5f93161f21294a226b42e47e83e3041bdaf8d3948d97fa12d4d2a45f866c5e03'),
-      (256, 16, 32, 12, 24, 'ea7336688d5d5cc5199321d521459742158987b15be6028b981e80f8c629fbf4'),
-      (257, 17, 33, 12, 24, '4fa9716a2c7efa24612a350c9b2fb681e1743838d36aa719897acb33756f13d1'),
-      (258, 18, 34, 13, 24, '6b674e2f1176811b946fda9cf1b181336cb95d4aa91d45ff80a0c17361e0e93e'),
-      (259, 19, 35, 13, 24, 'f1917c6b58b36ce38a89c30cd79b0c30c046eb7014b0d9e9884c5a045987c63a'),
-      (260, 20, 36, 13, 24, '3dff4d378b1dc63869524ef06146091038691a9f47ff2ed9c7aac8de00979831'),
-      (261, 21, 37, 14, 24, 'b6db5cbf8ea20a98cfd8fcbe827937b7da852c6233faade9f794c57a6488a62c'),
-      (262, 22, 38, 14, 24, '3005491509dc6e9e72e20602579741bee419a314bd195430d2daf680ea1cd2c4'),
-      (263, 23, 39, 14, 24, '3e145d278da44efc64070ac7001992239c264a0a6fcf89cf4091fa226a0dc95a'),
-      (264, 24, 40, 14, 24, 'dbb8146aa4dd01b8eb798513211408f6fe2684fa8d0cc913f307756354b8f003'),
-      (265, 25, 41, 15, 24, '76e435077f65b4114c4c8133d62b1e84e521305193fe63a024218a5c0d3acabf'),
-      (266, 26, 42, 15, 24, '4258e783be7c727f4137a08aab74ac427441a69d3b8ace8727fdbde6d0665198'),
-      (267, 27, 43, 15, 24, '20b6a92c3a6f2c1f4b7c0aaf3caa798f38a75ea5fc5dd487096fc462e2b04de0'),
-      (268, 28, 44, 15, 24, '1bb8544dad5bfc6923908a6fcc911f902952a12ed4a4ee083e134272a338ea88'),
-      (269, 29, 45, 15, 24, '131f1146aabbb36df59a51704c1c8133e55e7a5ffda2be5179ace83941f36cf1'),
-      (270, 30, 46, 16, 24, '6c5d963a765bdd36fc55bcb72c7802274e31e33486b557181ad71ebc723c5e87'),
-      (271, 31, 47, 16, 24, '70fea40825a8e3501cb66399b2bf5c1874e66851ad99eebe63ad6f0745b50be9'),
-      (272, 32, 48, 16, 24, 'de5a67a975b970c00b72a768c4355f18a26a5b36b6e2c6ef71fa973eb3134b21'),
-      (273, 33, 49, 16, 24, 'b3aef85807ae9dc756bcc74306811e305058da3e7406821892ba0ac79967af52'),
-      (274, 34, 50, 16, 24, 'd400e1d77b79d9bd2281f7ad098c8fea256d89f5be6ff5017256096910c8e076'),
-      (275, 35, 51, 16, 24, '1f71e68423c9b2f07cfe6983e56113892466bd1377944ba28c24aa9ce4f0d42a'),
-      (276, 36, 52, 17, 24, 'a7edab14ac7a8b58cf48a5adfefa9f4f7fed3cd9274f652e60705792f2fc1580'),
-      (277, 37, 53, 17, 24, '43c899ef4eb4c243c488ede5fc3b55ea8e139a361824ea4547f4820485b0015f'),
-      (278, 38, 54, 17, 24, 'bb9ddd34a46dc47a822d3a4186c282fd1d438009ef470a6597d41b82d75e9c9d'),
-      (279, 39, 55, 17, 24, '0e061ad141aa45d02ec355e125d531307a6118a033b3fed1e9ea7e7cff396b43'),
-      (280, 40, 56, 17, 24, '724909a99f437d4ef753992ea408d8f08d27e684ae2c777abe1bb057d58e26bd'),
-      (281, 41, 57, 17, 24, '7bed7170e09516ea8aba4c2c380ced39642a7ef6870b5fd9d721aa6fcad3c188'),
-      (282, 42, 58, 17, 24, '9c2298d1e33bc566ee8ed0ef3875b89b66568dcfb0e13813521740ad001dbb1b'),
-      (283, 43, 59, 17, 24, '2973e46c3059450953b63e7030a11d23ffc9a16c5ccc252b264e859a776f65a8'),
-      (284, 44, 60, 18, 24, '693129d4a53f630e2b4d832c3a627af31d3e7211693eabf300878fd8ba0f68e1'),
-      (285, 45, 61, 18, 24, 'd4ec3dd1761d4daf850cbe6cad304a4f78c4684adf8a4ea94a5b684d64ad382e'),
-      (286, 46, 62, 18, 24, '9e759ee76bfe1b17982411e7056bf0e84224bd75175c7a26d918173d38d7de9d'),
-      (287, 47, 63, 18, 24, 'f79ddf877ebd7aae11604421b9288081729f6e19bf68a997e0432616f5973b24'),
-      (288, 48, 16, 24, 8, '837e211e4dc40ec564fc95c02a428a6a5f25008ef8eb30d4a711ffb6df43469f'),
-      (289, 49, 17, 24, 8, '8a6bcae275f1e11887baf735e0ce9434535051cc015c1e458271e102436ce25e'),
-      (290, 50, 18, 24, 9, '83d804cbc6fe7273ec1c2b91dbaa04ed3fcaad05cc9f20c783753c8f51e100a0'),
-      (291, 51, 19, 24, 9, '735c2241a36f4a9c6de9adb125151dd84875b1742a5540fa61576568cb1d571d'),
-      (292, 52, 20, 24, 9, '4eaa2e573e25ba55e9cf7f0b839b27c3bf7ca952b44513169fbfe726fa10abce'),
-      (293, 53, 21, 24, 10, '8b606b7c2ac87a73c769682123ef7dd5601fb5fec8b16a863ab3edb4d6d20cd1'),
-      (294, 54, 22, 24, 10, '7bf463ed464b0ad470971aa042cfb389d73bf4dd0edc91f4c83d880ef5663a75'),
-      (295, 55, 23, 24, 10, 'b01ffa1d270b1f8f9606e3d77c0dc94cd4b2a2b7bdbde2e16d329a296ea50670'),
-      (296, 56, 24, 24, 10, '938a43c19b3b204849e85aaad77dab745cb07f5b451e3809e1a78664a76ceb0c'),
-      (297, 57, 25, 24, 11, 'abaa3598630dca26a608932a326fd2e99c9d2a86423f990d81167f9b35e06374'),
-      (298, 58, 26, 24, 11, '2d8aa72f4006d20da48ef18a4f7083fe6ad79cb6c19bb84755790d4861083cdb'),
-      (299, 59, 27, 24, 11, '94ba6cb96a0e22737e0865f730bf74014b10ed653c7157578e17cc40e6af436a'),
-      (300, 60, 28, 24, 11, 'e701a4c0bf50d8f32715f7aa5a9ddd0f99dc2eafff01e42761a98be33bc4bc0b'),
-      (301, 61, 29, 24, 11, '71ef67a16492fe351179a34ecbca823b91fc8fb397bef6227bba816502ec70cb'),
-      (302, 62, 30, 24, 12, 'b2c836a92e1c230bdd7171f81c0437259a796d69c81c87fca84232adc2da837a'),
-      (303, 63, 31, 24, 12, 'ec5cf813d3b52d255f70df1111f3cb8b79b2256f5894dcbc7b9c29d4b78314d9'),
-      (304, 64, 32, 24, 12, '8c1da861bf5887c542d699b7833b96274de5ed5f4da7ee5c9277ec308918bdb5'),
-      (305, 65, 33, 24, 12, '59af7612cc66ff730c91a8b5877ea4fe293b723b36753e1b2e144a60794cb9bc'),
-      (306, 66, 34, 24, 12, 'd0d52b4edd5ecd01ff74ee05c9f2b02293596f90000a0a15a10949eabd3503aa'),
-      (307, 67, 35, 24, 13, '23c00c593d547ddd7b4a9bfdd4d1dcd9e7bca50b8698a39b0a1b8aa388c31f04'),
-      (308, 68, 36, 24, 13, '45220bed60d3ef7bbe1d0f47c0196b338acee2465be298d5d7277e5b0238e966'),
-      (309, 69, 37, 24, 13, 'd914f145f1fa43ac6a7c481238ca25fe1bd2682d4294bbb506f894ae6135074b'),
-      (310, 70, 38, 24, 13, 'f06d02f46f667cb93f4581b27a472b9d79e326e09d9b289ca2bdc53543e25542'),
-      (311, 71, 39, 24, 13, '4cb19fbedb0cb3b862c93337c9596e5df66def960c38881245dae2ebb0c7344d'),
-      (312, 72, 40, 24, 13, 'b472639e03608ae60e6428f68f695f97a5f6a53af3411d288eb5075be98b2a6a'),
-      (313, 73, 41, 24, 13, '9be4233c61b3de4494ae55b3934573c29cb302ad2b5feed6a92c6ec6c1732ab4'),
-      (314, 74, 42, 24, 14, '8393df7be6502d823f8dfe9535c655c438f785c8b836e6bc3ba11ea858df6c05'),
-      (315, 75, 43, 24, 14, '41666171425632731cdaa5da7db51912a6291ec296b1025fe544b06bc0ba0284'),
-      (316, 76, 44, 24, 14, '6aa70b09bc10cd2fd591099fd0cad1f4c5ce40e1ded062db8eb794914ccd3969'),
-      (317, 77, 45, 24, 14, '65b3580b959e53b15c92ea5b324770a3f3402d1447d2b8098bf67dd1d9a1c056'),
-      (318, 78, 46, 24, 14, '0bbbd35e7a9873e2a95354d2c72d263224a4fb32d60ec18ece423d313832f810'),
-      (319, 79, 47, 24, 14, 'c092ede57738b87e8e0192896bc85b979d5b57e927f522d89d50ba9bef7e9c71'),
-      (320, 16, 48, 8, 24, '8d4b8f8db946fe08b5d8a4d1f65654d8fe036867e82e7b92723476ee05a75eea'),
-      (321, 17, 49, 8, 24, '4d884c83b00804842d68b0fc5c7191369a87974e75d541a3adb47f82dc00a49f'),
-      (322, 18, 50, 9, 24, 'c22970988d7d39ea73b30b2edf0eee9dd51cfb1a89c8aecf69513d6d451068ac'),
-      (323, 19, 51, 9, 24, '46b645ad19fcda98b735afc7344c6a67b0a4a012ffc19679a89332c8e0551d4c'),
-      (324, 20, 52, 9, 24, 'd4c757ed63baae93185cfcb3e85644bcc6e0898076962d490c2ea721b720912f'),
-      (325, 21, 53, 10, 24, '659f917d1c6eb03bf808c2795d094a58c98a689407086814e88468d6bfc98fc9'),
-      (326, 22, 54, 10, 24, '54357276af382b77f71f539096c07166f05f97865cd8c2ce8029169161e0c3a2'),
-      (327, 23, 55, 10, 24, '2c788358b19aad82be0e17f686d227bfd0b433e722679030b59ccc54b2637deb'),
-      (328, 24, 56, 10, 24, 'bb9319470dcff993f99b1855ede4f3978b0c29543967ec7f39fa9d2effa9f031'),
-      (329, 25, 57, 11, 24, '7a91701064928c129ae31890cac5ccc6326edab69d07be91c15d04fd6fa44e6c'),
-      (330, 26, 58, 11, 24, 'f34a3e32969a564233676d206e7d7b871ff79c4281879389af631a7f860a547a'),
-      (331, 27, 59, 11, 24, 'c0c5e48bf98e14068a269bec608655bf9a70399bd0b6cd31be3c4f52abfb7d66'),
-      (332, 28, 60, 11, 24, 'af4e4d8ef3a403110eafdc411e160d01759047fef1b4737f52b063d06794545f'),
-      (333, 29, 61, 11, 24, '0b6359c43e676c1fb0ee4dac86812f29a5d3dbeb716ff13d8087a14161f7eef0'),
-      (334, 30, 62, 12, 24, 'c58d34076a3c117bc86558e7552794ceb23c93c4f1148608f318fdee256ec3e6'),
-      (335, 31, 63, 12, 24, 'ff308bede1ce3d132e0d6d05faa53062ca9aabc0ac9811a242b0a6f364d24b3b'),
-      (336, 32, 16, 24, 12, 'a5cad7d0ed3ed63d28701841930716d2afdc11204fa003507458be4d8aa01be7'),
-      (337, 33, 17, 24, 12, 'e9d0987f0a1fb3a8a8bba232f70bf5fd8600dad112fd140c37eb6e37f3360727'),
-      (338, 34, 18, 24, 13, '4a5441e1a195840c430cfe1fccbd7bbedc1d0de8e566ac02d3b50c1cdd963202'),
-      (339, 35, 19, 24, 13, 'a7cf992ca8c5dc7c3ed79e844968ce8f0b88c095725a0850eb7a838b4e777e46'),
-      (340, 36, 20, 24, 13, '0306f0c4952e54d7ab0c108f02f1e2fef46f9b571e91f0710601ea60831ebf1f'),
-      (341, 37, 21, 24, 14, '9eadb049ca1ec8a5dde6a917e12dd5c2b802aec7b8afd27a73d22f6d0ab966cb'),
-      (342, 38, 22, 24, 14, '8b2fabe0cab133f3995900c7667968597d443ea2c2cc9d4ea37a55029b1d79d2'),
-      (343, 39, 23, 24, 14, '6a19871d3d18c6b9a24e5af6037e00adc4fc9bf7baa58fb893275d2127916f64'),
-      (344, 40, 24, 24, 14, '8fd3c38ab99acc8803f2c1891857256e3ba1c9504d4a8d80fd50f061a8ccff1b'),
-      (345, 41, 25, 24, 15, 'efd9f7fb655b5c2f9844e1dfbc02ec362f0d333538064a1a21a474fa40c4cd68'),
-      (346, 42, 26, 24, 15, '60c8f070b74f2c424d700763acf271a8494726902c6712ff60db965548b746c5'),
-      (347, 43, 27, 24, 15, '5032334ab8470ea1bf3fce15ee0800648398cf49307a437ace3fdd330550443f'),
-      (348, 44, 28, 24, 15, '2e8a97079cf707a961e3dc3b25c3c676bd707b4464a2b14e7bbaac44d62eb27f'),
-      (349, 45, 29, 24, 15, '8f1ffbdcf9ce319e4d98d7fb6b294bcebde4c042244b8d2373213b6aa8e820bb'),
-      (350, 46, 30, 24, 16, 'e3aee19c1dbf13390b98cbf8c841fe3e13c160b39aba396ec3743ac2dc56e492'),
-      (351, 47, 31, 24, 16, '106ffe3c69f25e777a4d3d3533d9b82aa0435851b92c7bd204553c603ce03844'),
-      (352, 48, 32, 24, 16, 'b814a18cf99c7acd328508676b95e5705837fc4ceff527c55bb89d30e217f4a1'),
-      (353, 49, 33, 24, 16, '06da26174b9232e5ee2631af4a73125a3f77dec3f83190c10164643f8b769fc1'),
-      (354, 50, 34, 24, 16, 'd6ae1be1f1d521c4b74420f35dcdfd69ac991423050d900a60c3e4c5e2bb8f6f'),
-      (355, 51, 35, 24, 16, '77e79e9268935bcff1016363d1347eeeb5dfd9dd52d34fdfd80df5d20e773844'),
-      (356, 52, 36, 24, 17, 'b5cfaea2fb249ea85cfdbc20dbca412e360def6e055d77a13c4ff679928ccb82'),
-      (357, 53, 37, 24, 17, '05f843011f28d491d8686850ac309c8f2de3a8c979244d66c7f3f4da1fce34c9'),
-      (358, 54, 38, 24, 17, 'e09c44dd8d8bd94c4b165387cb9cec7b3e61dcc8f89e5dfa12477388bbdf7a69'),
-      (359, 55, 39, 24, 17, 'c658f322ca42daa354227fb965c096f66b54192e39769a0a8e37d87f0a6e1f39'),
-      (360, 56, 40, 24, 17, '2090714e3d7018405f4b98fbe25164e1fd380c107f335d3fbeb9817d16f41210'),
-      (361, 57, 41, 24, 17, 'd384a75cb00e0a544448fa6b6e29e986db7e59ba0929fcde6ee2f2b51ff89dbf'),
-      (362, 58, 42, 24, 17, 'f8c21524b5ae407bb16f3962c192edeb551c27e3d5d8c337edbe0ee7e3bd3cdb'),
-      (363, 59, 43, 24, 17, 'fedb67f198aea0858b563c89c50421e31a53d471f7488cab0ee30b023123ae1d'),
-      (364, 60, 44, 24, 18, '9b06832a4d7a20b81e7f44eaf407bc5150380b4b208835f990deb92738695e55'),
-      (365, 61, 45, 24, 18, 'b53f528922d32c36d39e316582e7190695eebd71133c736b5889dbf1a9919017'),
-      (366, 62, 46, 24, 18, '34d53494120aa9f5aee17a825f13acac9a49c9e79568677b21008f9f62feb336'),
-      (367, 63, 47, 24, 18, '35e3b18c94d2c4618224cefc735f9a30754cf543f4fe60a679c224b54d4737fd'),
-      (368, 64, 48, 24, 18, '9aa8336bce927edde8bbd5e29bb1a254a6cf5cc2e01b88946a6a202e849d7178'),
-      (369, 65, 49, 24, 18, 'e4b5644d8bd02a4538e72e1f0e182f95b9ac76d5cdd63a1b40c7f2fd7f1c23c5'),
-      (370, 66, 50, 24, 18, 'f1d037f9feea0b92e69a6ce02555d61d8f625131ac124eb5e85a81261ff42a91'),
-      (371, 67, 51, 24, 18, '04ef5553fd8bcef02e2e0e06799e6a6fad8bb3784de10644884336a210737512'),
-      (372, 68, 52, 24, 18, '053d96e0b9f1d6ef3444a0ed55d4fda2cd973eb0bc1afa66de42afb3858c4466'),
-      (373, 69, 53, 24, 18, '948c9c3afb23db86c461afdc5b768e463beec8d9e5fe54e0ef21426bdc374ed1'),
-      (374, 70, 54, 24, 19, '16364d4876e4b5dba3a3188b17e67eb81bcd3f0a1adc6ab162f8683b71b6d4b0'),
-      (375, 71, 55, 24, 19, '223ed090dc4e5b9b015983b237be92f5db55755d8f613f3f885680ed3d1acf3d'),
-      (376, 72, 56, 24, 19, '64afd31f1416ce95b2569b80391e4bfeafba408f5ac6d2b4eab8a6fbe1bf5528'),
-      (377, 73, 57, 24, 19, 'e53423f11b43bc9508a071e3ccce10d9a004da5244f998d7274c9c3ff38f445a'),
-      (378, 74, 58, 24, 19, 'afce3e3ec8645226b1e0da1bccace2380f04ba016f0264e9a32cea15b4542a15'),
-      (379, 75, 59, 24, 19, 'c989b2ce83aee3e7e67a79222aabbc454f56ce8fe875244b37477cfa12b8fd37'),
-      (380, 76, 60, 24, 19, 'baaa3e1dd4a1ce98f3930bb2322345f89413fdd137440ae33480d33325d78e96'),
-      (381, 77, 61, 24, 19, '121eea3c1a243451f67f7df318f36a19a3be55e99e989f12f8e5c93cfaca448c'),
-      (382, 78, 62, 24, 19, '2d0e1b0f9c5ef4010e2c692b26ed1011df51e49d134b76e312c05840f8788697'),
-      (383, 79, 63, 24, 19, '3631fef95bd88756ac752b603c09aefa596a448642fb6fe84a49e1a2ab873843'),
-      (384, 16, 16, 16, 16, 'c6a693bd324b2bf6c61245e266387123d868d3b4c893e06210236a6e7fb492b6'),
-      (385, 17, 17, 17, 17, '6fab2d0fa3af6206ee7521164eca0425a020fca1d932d03d1907ff2e765266b1'),
-      (386, 18, 18, 18, 18, '5358d3b5a6e12cd06c47a03cd45d97f38eba3d942e23bad348cbeefd47b0a38f'),
-      (387, 19, 19, 19, 19, '825a439320797b0c3b7f8ad7a4fad7fca7d81c34267dd4d8d5cb3ce818799bb2'),
-      (388, 20, 20, 20, 20, 'eedbec1ace83e8a8cda5ea25c0745733b9bc5223db3e6a6af157c53ca2bf5001'),
-      (389, 21, 21, 21, 21, '80ebe768bcc93397d42d65db9bf3484de0de3f377841b9a09852575bc9f26bab'),
-      (390, 22, 22, 22, 22, 'e04271e4ea359d4dfafad17e092e46f94cdcd7dc8f6c5a7eab387aed28da1fb3'),
-      (391, 23, 23, 23, 23, 'e637740293191ade858ad0cfdf26f1622e5eff0c36f1aa98868f703ec5133246'),
-      (392, 24, 24, 24, 24, '6afb3c1f0b11d3f82172ea898bf75096cf0652c3aa86e7692f28541c6d223bea'),
-      (393, 25, 25, 24, 24, 'ddbeb73014c9eab83f427adc00414fe12f76fede7c01cebf390017e9c9842b96'),
-      (394, 26, 26, 24, 24, '0883a67e83d16bfbdd75148c9b69ba4cd44069f6e7d49b3be6ccbc81140ed77f'),
-      (395, 27, 27, 24, 24, '9fd605d489847073073e7ee699b744f4a706136764ece33cef34f93659525e14'),
-      (396, 28, 28, 24, 24, 'cab12173aa6516d84a30b4144251a1504396cc9fb58675efeb2e835687e2a4f6'),
-      (397, 29, 29, 24, 24, '21e3b4b0ce9731d66851eba9e9364206bba12c3f04203c402d5bc84185857051'),
-      (398, 30, 30, 24, 24, '393b78adfa393d79aea7212a3e2ab6965d9b5a4cdb3a7e7d06c45d40c656c80d'),
-      (399, 31, 31, 24, 24, 'fcb2792358621dc05e8c7eb78441fd2be8d83fcd960b6e8650f69efb399567b7'),
-      (400, 32, 32, 24, 24, '6ce89029dcc8cfae7c91561cb555836221b66f197b2bf5b49400fb78f77269fd'),
-      (401, 33, 33, 24, 24, 'a41fb766c9665d724461769aef376d8562ef1a177fe5ff20ecf1e793ac9cd12f'),
-      (402, 34, 34, 24, 24, '537689ec093d9b2fd39c0b01fa174ab012156e2c5e2868e0444e3ef6f194fe90'),
-      (403, 35, 35, 24, 24, '68cd74ab6fec2ff036fd5a704d8a6d334d12c8f4a32a6067d02f4ad1cabc452b'),
-      (404, 36, 36, 24, 24, '68fc2337337ada1ff33a6bbea7f193d9e9ef723e36978e7e2f97bb6fd410d67e'),
-      (405, 37, 37, 24, 24, '9822c8ec32f65715982e7b4ca90c5bbca887a00d920cbe514db86f80a41e2e1f'),
-      (406, 38, 38, 24, 24, '0cb00d667192083496cc02fd732d5f5d659a88a7f6be1249e14b23a7d01e003b'),
-      (407, 39, 39, 24, 24, '93751ab16029b8bd1198cf543de83a4cd24ab704e152ce77c509fdc97ea0c91f'),
-      (408, 40, 40, 24, 24, '09722c7bcae57ccbc93c8394bfd4f8a6e344e63b4fc898a31cff39684b8c72db'),
-      (409, 41, 41, 24, 24, '9dfa26b1155deb340088a30f3f1e5f1dd7c09e4924598e5ebec6d7c677ba24be'),
-      (410, 42, 42, 24, 24, 'c8568d5b8191c1c2cdb47d9dc085f3b27bdd4169af7ea8aad51981eb8df83e1d'),
-      (411, 43, 43, 24, 24, 'c89d717f375e6ce9024b71582cf843e2633f117277ad5ae0ead0d82581901d54'),
-      (412, 44, 44, 24, 24, '5f861a74a4f2cb1fcb60f5906349769effc80a47290cdd9aac7a23a9247c6d1f'),
-      (413, 45, 45, 24, 24, '24efe7fa0c99a48c13a9d14e2253a003da8d09f89e33e698572669e48bbf54ce'),
-      (414, 46, 46, 24, 24, '92bfef2ce7e78f6119665f1537cc51cc55ddfd3ead543cd9127451986afb869f'),
-      (415, 47, 47, 24, 24, 'b01e56f0058b0356c224dcd8db1b9291f1971c65ef219919ba26de536624d5d5'),
-      (416, 48, 48, 24, 24, 'c7ba8903d43074b468edde10956f0da7602cc86cdbdbd374b51464e85459056d'),
-      (417, 49, 49, 24, 24, '511001c6226a41f3fb8f1bd9e38dd638063b27f6bd4dc6ee84c9da13718eb471'),
-      (418, 50, 50, 24, 24, 'd8f96bd525a047d4c82e171dec7cad2c7cbbb23ef1599a9855c24a196c4cb9bf'),
-      (419, 51, 51, 24, 24, '855dfa3c1ea108284ab9bbe124f1119042febbad7fde55395bb85e55744fb89c'),
-      (420, 52, 52, 24, 24, '94814b2ccc0ef271f8aca2f2fcdbd78d80e7d93fb67726714207a0fb5efeb3de'),
-      (421, 53, 53, 24, 24, '13298169dd3107bf8a091bd946e06424f96e2e3e1bffeda5c882c7b4d479e5c8'),
-      (422, 54, 54, 24, 24, '7f4ad8abb65a00f39ac3971fc19d875a0b53f6424c06603f9e582774ea0b59b1'),
-      (423, 55, 55, 24, 24, 'f0c102d463c5b2365e63d9deac1e53cf9998146d1958c6681263905b76946d31'),
-      (424, 56, 56, 24, 24, '601fb4f7b91cde9b0cded40949b1a1a3fdc1d3ea2030f55495982591a9db9f1e'),
-      (425, 57, 57, 24, 24, 'c77a8da76058a207678521fbceaaf85dbf2df597157d7d184c0548a7e711602c'),
-      (426, 58, 58, 24, 24, '9df6845faaee116669c467077d2ec4157315ee5fcaa3b315d5876c9014f3b10d'),
-      (427, 59, 59, 24, 24, 'b35f9b6fb904b23dd9019420dbf75bcb65cb5ecc8c826077158453b1ce96d978'),
-      (428, 60, 60, 24, 24, '2754058cf82cfa982eadb47ad62f5a8074d1c74c8bcb259442852bee12d0463d'),
-      (429, 61, 61, 24, 24, '9540457897d01a2e1b426c5b9453c27db00cabfc1550c09808ce85ecdae1d0bf'),
-      (430, 62, 62, 24, 24, '364b897e4b94826acf244a7810941fa001a214bbf68cd3bf770f68d334de836b'),
-      (431, 63, 63, 24, 24, '16176c09c5082e8bb0e09290e6c13341f24521a91bc01acbf4ee8902c41f0284'),
-      (432, 64, 16, 24, 6, 'ae08a5ac81ccd42cf903d510571de9319f6c039d43268d17838d30954cdf5a96'),
-      (433, 65, 17, 24, 6, '34b56e75ffecbe8087a8237c3f68879a58111dbb2cf4a42d1217d2b4b57f4758'),
-      (434, 66, 18, 24, 7, '510966aa96ec821e868bd8bfb8a2794bf7410fd3164572158ca6ab3d1185c78e'),
-      (435, 67, 19, 24, 7, 'af36a804ef254629fa88e9824d3abcffe2f90dcd302a5c115813455ccb3bde72'),
-      (436, 68, 20, 24, 7, 'd9e1aeed653a3766287c8d8001674a436358e32ee38aa21e3dcd2dec6b4ff37f'),
-      (437, 69, 21, 24, 7, 'cda5c06d08599252496fcc2a22ee6c049b3c131ef81fe2bb2e83320656d7bae2'),
-      (438, 70, 22, 24, 8, '2e81efb54830093ca5fadfd87182f21d73f35a779bf4ea7be872d70ef59057c2'),
-      (439, 71, 23, 24, 8, '42dd232cfaa825d6a641f0c7d8e91fe5db17f9f0d107de763b471ab5b37df1b0'),
-      (440, 72, 24, 24, 8, '0a428696c9be522f7f125eac392284f93e5056b250bd5c627fc5c8ca3d41fc46'),
-      (441, 73, 25, 24, 8, 'c23aa02bdda4efe69bd02c8d70015f00b03c1aeb9bd018a4d797f348dbd3e9b6'),
-      (442, 74, 26, 24, 8, '0c84e91e3ddeabfacec35155f3405d7da5250dbd5cd839246a271ccce1236100'),
-      (443, 75, 27, 24, 9, '1f5857245fc1287c1d0fab69dc1bc785469b3f409fc66840170b61fbbcaaa76f'),
-      (444, 76, 28, 24, 9, 'ad81def98b11558630726e5a44c00d849b2b4fcf79dfadea22abe8558f2ade5d'),
-      (445, 77, 29, 24, 9, 'd885f013a8b50cb3b85ba9e4aa9c97c2663c75108e26997046a2d9f5a1e86c74'),
-      (446, 78, 30, 24, 9, '177c3be799e40dbe54229272a654541b5413041f7cf613bb142e5993a5f5c3b2'),
-      (447, 79, 31, 24, 9, '5f93161f21294a226b42e47e83e3041bdaf8d3948d97fa12d4d2a45f866c5e03'),
-      (448, 16, 32, 12, 24, 'ea7336688d5d5cc5199321d521459742158987b15be6028b981e80f8c629fbf4'),
-      (449, 17, 33, 12, 24, '4fa9716a2c7efa24612a350c9b2fb681e1743838d36aa719897acb33756f13d1'),
-      (450, 18, 34, 13, 24, '6b674e2f1176811b946fda9cf1b181336cb95d4aa91d45ff80a0c17361e0e93e'),
-      (451, 19, 35, 13, 24, 'f1917c6b58b36ce38a89c30cd79b0c30c046eb7014b0d9e9884c5a045987c63a'),
-      (452, 20, 36, 13, 24, '3dff4d378b1dc63869524ef06146091038691a9f47ff2ed9c7aac8de00979831'),
-      (453, 21, 37, 14, 24, 'b6db5cbf8ea20a98cfd8fcbe827937b7da852c6233faade9f794c57a6488a62c'),
-      (454, 22, 38, 14, 24, '3005491509dc6e9e72e20602579741bee419a314bd195430d2daf680ea1cd2c4'),
-      (455, 23, 39, 14, 24, '3e145d278da44efc64070ac7001992239c264a0a6fcf89cf4091fa226a0dc95a'),
-      (456, 24, 40, 14, 24, 'dbb8146aa4dd01b8eb798513211408f6fe2684fa8d0cc913f307756354b8f003'),
-      (457, 25, 41, 15, 24, '76e435077f65b4114c4c8133d62b1e84e521305193fe63a024218a5c0d3acabf'),
-      (458, 26, 42, 15, 24, '4258e783be7c727f4137a08aab74ac427441a69d3b8ace8727fdbde6d0665198'),
-      (459, 27, 43, 15, 24, '20b6a92c3a6f2c1f4b7c0aaf3caa798f38a75ea5fc5dd487096fc462e2b04de0'),
-      (460, 28, 44, 15, 24, '1bb8544dad5bfc6923908a6fcc911f902952a12ed4a4ee083e134272a338ea88'),
-      (461, 29, 45, 15, 24, '131f1146aabbb36df59a51704c1c8133e55e7a5ffda2be5179ace83941f36cf1'),
-      (462, 30, 46, 16, 24, '6c5d963a765bdd36fc55bcb72c7802274e31e33486b557181ad71ebc723c5e87'),
-      (463, 31, 47, 16, 24, '70fea40825a8e3501cb66399b2bf5c1874e66851ad99eebe63ad6f0745b50be9'),
-      (464, 32, 48, 16, 24, 'de5a67a975b970c00b72a768c4355f18a26a5b36b6e2c6ef71fa973eb3134b21'),
-      (465, 33, 49, 16, 24, 'b3aef85807ae9dc756bcc74306811e305058da3e7406821892ba0ac79967af52'),
-      (466, 34, 50, 16, 24, 'd400e1d77b79d9bd2281f7ad098c8fea256d89f5be6ff5017256096910c8e076'),
-      (467, 35, 51, 16, 24, '1f71e68423c9b2f07cfe6983e56113892466bd1377944ba28c24aa9ce4f0d42a'),
-      (468, 36, 52, 17, 24, 'a7edab14ac7a8b58cf48a5adfefa9f4f7fed3cd9274f652e60705792f2fc1580'),
-      (469, 37, 53, 17, 24, '43c899ef4eb4c243c488ede5fc3b55ea8e139a361824ea4547f4820485b0015f'),
-      (470, 38, 54, 17, 24, 'bb9ddd34a46dc47a822d3a4186c282fd1d438009ef470a6597d41b82d75e9c9d'),
-      (471, 39, 55, 17, 24, '0e061ad141aa45d02ec355e125d531307a6118a033b3fed1e9ea7e7cff396b43'),
-      (472, 40, 56, 17, 24, '724909a99f437d4ef753992ea408d8f08d27e684ae2c777abe1bb057d58e26bd'),
-      (473, 41, 57, 17, 24, '7bed7170e09516ea8aba4c2c380ced39642a7ef6870b5fd9d721aa6fcad3c188'),
-      (474, 42, 58, 17, 24, '9c2298d1e33bc566ee8ed0ef3875b89b66568dcfb0e13813521740ad001dbb1b'),
-      (475, 43, 59, 17, 24, '2973e46c3059450953b63e7030a11d23ffc9a16c5ccc252b264e859a776f65a8'),
-      (476, 44, 60, 18, 24, '693129d4a53f630e2b4d832c3a627af31d3e7211693eabf300878fd8ba0f68e1'),
-      (477, 45, 61, 18, 24, 'd4ec3dd1761d4daf850cbe6cad304a4f78c4684adf8a4ea94a5b684d64ad382e'),
-      (478, 46, 62, 18, 24, '9e759ee76bfe1b17982411e7056bf0e84224bd75175c7a26d918173d38d7de9d'),
-      (479, 47, 63, 18, 24, 'f79ddf877ebd7aae11604421b9288081729f6e19bf68a997e0432616f5973b24'),
-      (480, 48, 16, 24, 8, '837e211e4dc40ec564fc95c02a428a6a5f25008ef8eb30d4a711ffb6df43469f'),
-      (481, 49, 17, 24, 8, '8a6bcae275f1e11887baf735e0ce9434535051cc015c1e458271e102436ce25e'),
-      (482, 50, 18, 24, 9, '83d804cbc6fe7273ec1c2b91dbaa04ed3fcaad05cc9f20c783753c8f51e100a0'),
-      (483, 51, 19, 24, 9, '735c2241a36f4a9c6de9adb125151dd84875b1742a5540fa61576568cb1d571d'),
-      (484, 52, 20, 24, 9, '4eaa2e573e25ba55e9cf7f0b839b27c3bf7ca952b44513169fbfe726fa10abce'),
-      (485, 53, 21, 24, 10, '8b606b7c2ac87a73c769682123ef7dd5601fb5fec8b16a863ab3edb4d6d20cd1'),
-      (486, 54, 22, 24, 10, '7bf463ed464b0ad470971aa042cfb389d73bf4dd0edc91f4c83d880ef5663a75'),
-      (487, 55, 23, 24, 10, 'b01ffa1d270b1f8f9606e3d77c0dc94cd4b2a2b7bdbde2e16d329a296ea50670'),
-      (488, 56, 24, 24, 10, '938a43c19b3b204849e85aaad77dab745cb07f5b451e3809e1a78664a76ceb0c'),
-      (489, 57, 25, 24, 11, 'abaa3598630dca26a608932a326fd2e99c9d2a86423f990d81167f9b35e06374'),
-      (490, 58, 26, 24, 11, '2d8aa72f4006d20da48ef18a4f7083fe6ad79cb6c19bb84755790d4861083cdb'),
-      (491, 59, 27, 24, 11, '94ba6cb96a0e22737e0865f730bf74014b10ed653c7157578e17cc40e6af436a'),
-      (492, 60, 28, 24, 11, 'e701a4c0bf50d8f32715f7aa5a9ddd0f99dc2eafff01e42761a98be33bc4bc0b'),
-      (493, 61, 29, 24, 11, '71ef67a16492fe351179a34ecbca823b91fc8fb397bef6227bba816502ec70cb'),
-      (494, 62, 30, 24, 12, 'b2c836a92e1c230bdd7171f81c0437259a796d69c81c87fca84232adc2da837a'),
-      (495, 63, 31, 24, 12, 'ec5cf813d3b52d255f70df1111f3cb8b79b2256f5894dcbc7b9c29d4b78314d9'),
-      (496, 64, 32, 24, 12, '8c1da861bf5887c542d699b7833b96274de5ed5f4da7ee5c9277ec308918bdb5'),
-      (497, 65, 33, 24, 12, '59af7612cc66ff730c91a8b5877ea4fe293b723b36753e1b2e144a60794cb9bc'),
-      (498, 66, 34, 24, 12, 'd0d52b4edd5ecd01ff74ee05c9f2b02293596f90000a0a15a10949eabd3503aa'),
-      (499, 67, 35, 24, 13, '23c00c593d547ddd7b4a9bfdd4d1dcd9e7bca50b8698a39b0a1b8aa388c31f04'),
-    ],
-  },
-  'q_video_frame_sample': {
-    153156: [
-      (0, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (0, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (0, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (1, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (1, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (1, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (2, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (2, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (2, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (3, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (3, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (3, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (4, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (4, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (4, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (5, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (5, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (5, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (6, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (6, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (6, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (7, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (7, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (7, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (8, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (8, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (8, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (9, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (9, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (9, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (10, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (10, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (10, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (11, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (11, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (11, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (12, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (12, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (12, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (13, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (13, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (13, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (14, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (14, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (14, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (15, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (15, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (15, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (16, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (16, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (16, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (17, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (17, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (17, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (18, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (18, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (18, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (19, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (19, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (19, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-      (20, 0, 9, 36, 36, '8e2267d9d5b3887b3155ac1c3ea2f23f34ef2072b48e7ea2a0e2d826699767e1'),
-      (20, 3, 9, 36, 36, '432f1b390e55ce9e52fde23ef3fac4deb7394d7746e84bb34b7a7fb14b40ae80'),
-      (20, 6, 9, 36, 36, '39b419cf935494540e712c2622589962f429f793305e8f1e9b6cc92a28b89701'),
-      (21, 0, 9, 37, 37, 'bef64838d49ccada5c0b459946c321cd91b0d897895270bab0e69bfe0a1c4186'),
-      (21, 3, 9, 37, 37, '241c1b8b05fbfa04d04ca702ef9491ba58d0f3b4dff52734abe5ef94cd9b9636'),
-      (21, 6, 9, 37, 37, '09fba7228703b4160dd29da3ce6a4715ff93a9c0003b670d550cb73baf034701'),
-      (22, 0, 9, 38, 38, '932db3e008ec4488ce17287f81170a7862796c650dc271cae7b0f70261dfa27d'),
-      (22, 3, 9, 38, 38, '33740f21df6eac2624d9e188ca5356ef20cee44befb496fbbb2ff0a3fe28e0aa'),
-      (22, 6, 9, 38, 38, 'cf86939424e249d6d07439c7fb5c996d689ae057b644d93c8b51dc59058774ff'),
-      (23, 0, 9, 39, 39, 'c2ce2172256dcee2e4c13d86684c37b9d633ea43599b80ee81d4a6019ffd5e80'),
-      (23, 3, 9, 39, 39, 'cba1c95fc94d5f06eb313e51bcdc6b9ab1548bf551d41b2480332795de8d2adb'),
-      (23, 6, 9, 39, 39, '7985683d280f5b4a6bb910f562537a093498bc76a447c0370dabcc5d8e3dfa3c'),
-      (24, 0, 9, 40, 40, 'ff657e41afc635ff08e0a4abab525368043258df941e1d2ed25b482b096e7824'),
-      (24, 3, 9, 40, 40, '761c108367f657b8089192b9a22176fd36d287c590d6a8b437880243809e0d90'),
-      (24, 6, 9, 40, 40, '7bd196b5358ead0a4538348c04a26344c35fadc8c083a6f86ac6d6c0a4ab8c3e'),
-      (25, 0, 9, 41, 41, 'a24bb88ed1a55a5eb96dabaa64525de563901413639d240e6151c9eedbcf231e'),
-      (25, 3, 9, 41, 41, 'c588f878a531db49cf9ea0e87876003a55452529365538955d3ab42782be47b2'),
-      (25, 6, 9, 41, 41, '1a821f7233989043862206aa25bd30504a8dde18a20032e24493a657eb2ae036'),
-      (26, 0, 9, 42, 42, 'd02923e877543df074b5efdf26a5b8065101abd185d5916d59c6a67e54a7177b'),
-      (26, 3, 9, 42, 42, '84a50ba70c76060f329e1b22071ddecc8803f7ab083bd899c5c96218ab0c93f2'),
-      (26, 6, 9, 42, 42, '1a6b741e8e1846f896fee954e422b48c30639cb0c050e50337b8e646f457e8b3'),
-      (27, 0, 9, 43, 43, '2c701d56941329b13669a9d35fcf15aca518194cf8c9bf23be10ea1fac68da93'),
-      (27, 3, 9, 43, 43, 'd1dde2f7cb06e0b1eac1c0a0fd44edbf50ab53cf2bdd94e97aede3c0e7ae5ca2'),
-      (27, 6, 9, 43, 43, '194bb921b71faf4154cc3145afc1652ee1f5cbb5271b59bf36a44c18954bd51e'),
-      (28, 0, 9, 44, 44, '157387272447ffa6bd4dffe247f0a8ed6cced1afefbe294e9759207dfa928edd'),
-      (28, 3, 9, 44, 44, '6032306c5855632d26d21d5e523146db323d322d52ad96ad13b815529cd55906'),
-      (28, 6, 9, 44, 44, '1e58ef598b916f1092d2a576204324d9628736711610d4d8b28faa69a398565b'),
-      (29, 0, 9, 45, 45, '8ef00e70eec04188432ee3cdf06aaf5f8a70b67d746d723e779e37cf255e7e57'),
-      (29, 3, 9, 45, 45, '47beb753ca5d22996f2613d216851657dbd32346eb8b8ecfde77ba2a3e475305'),
-      (29, 6, 9, 45, 45, '03721557b78b5fa383d9c81488ab24b7d033bd1b53537ff6ae9de9a487ee23e0'),
-      (30, 0, 9, 46, 46, '1a503cf36668310c171d3b1908e16af2c79525648d470c3247d49286fa13c474'),
-      (30, 3, 9, 46, 46, 'bf86ce3aaba71a7d0e823339d11d52e5db6adfa69c00c5896eafe9a5cd73efdc'),
-      (30, 6, 9, 46, 46, 'a38f000d6474d7208c6a5c0ac176a4b9173c9b8759a42f748ad1dbaafc48ddf2'),
-      (31, 0, 9, 47, 47, 'e01c89ddf285a808cc59dd30341979021e680880c09128e56646893853f8c8a4'),
-      (31, 3, 9, 47, 47, '08f7f319765523f1f252f09c4922d7b5f4ab489430167fa3a1670511fa1c12f5'),
-      (31, 6, 9, 47, 47, 'acf788970d3826a2e336da1830c3cb3f47bb8bac47549f9b3117cf2fac70496b'),
-      (32, 0, 9, 48, 48, 'd93da555eaaa95d22d99ac77e1940624cfb87dccbd77c719d4068ff71c6a9782'),
-      (32, 3, 9, 48, 48, '957078a4fe289fe09f3fa9e029d1f3b8e0208bd91719f02efd9309b7d0cbc416'),
-      (32, 6, 9, 48, 48, '03384c23f91a22d72bd94aaf4248f2403f50ba91d87e947ed3666567f488b81e'),
-      (33, 0, 9, 49, 49, '539a2fccef6a006d4f517540d56793e9be1341e8dd53341ed41913342e849d1a'),
-      (33, 3, 9, 49, 49, 'a82f9b8d65fec085550f13f943c37066e8b72acd26315964a86c58bebe5a5857'),
-      (33, 6, 9, 49, 49, 'cb96c5e3e5b63b442382f3c877dc48348a7bec99a68335dffc065ca75007cfd7'),
-      (34, 0, 9, 50, 50, '34d6781cf6e48453714e57f44273cea8073587187cbfa582df2772fd4b05b0ab'),
-      (34, 3, 9, 50, 50, '463b64415db029d7e867b9737f8f9dd1dc652abe7c304ac64d5729246c476873'),
-      (34, 6, 9, 50, 50, '12a31686a0dfe8c4eb3e3c63c791513289192576981c081066ac8bdcbe711d37'),
-      (35, 0, 9, 51, 51, 'af5d49e6e42328128857a3cb3b064c14ffaf680b2ddc27243719988f6cf970e2'),
-      (35, 3, 9, 51, 51, 'e2dd68fb3381d341bee0fa68583b558387027067ef9f83bb8cbc6d0dcb01ff7a'),
-      (35, 6, 9, 51, 51, 'd1aa44c84feea301ddfcaaaca1f6b381870bf6b6fadef66b3eb6bb1eb3e8a540'),
-      (36, 0, 9, 52, 52, '1eb2e7bc51fd9dfb1ea02c1675f784efa7087855c1f791fd4bd92d99aa2f99a5'),
-      (36, 3, 9, 52, 52, '23026a91ce87e0f535091463b23cd61ce28ff13ebf0c0bbdfdf77cd30c2870d9'),
-      (36, 6, 9, 52, 52, '5a8d6e7eb10c094ec82bc6b1e7ccf4b35f0443a6c2cd39bbe79103869999505f'),
-      (37, 0, 9, 53, 53, 'a7db595a870b83d019aefa8bf1f01f20337b958339196e91e7c2c75ae51f65ec'),
-      (37, 3, 9, 53, 53, 'bc08b1743c518314df8c9fda918f9ea908fe9afb45910dcc51222a1ccffd6e66'),
-      (37, 6, 9, 53, 53, '1056d0defff8c1ad62c6444c15a6887fc7fd388c807a8e2b1870ad7542c68b09'),
-      (38, 0, 9, 54, 54, '2afa136a26802e24f52b6f99fc0d9636ffd4e07a2c360def977954cdfeaae085'),
-      (38, 3, 9, 54, 54, '24a1f9c8c571c1d034b5a5e0925ccefdcc0bf291b51da8179e8dbd55767b0750'),
-      (38, 6, 9, 54, 54, 'bd0a89ed8e89b12f8a6d0715b2680cd54f41bbe63af38f6974df40bfe7a1546e'),
-      (39, 0, 9, 55, 55, 'c089c997ea965416b0fda611986b9032fc64d0078e2e7a63ab02070ed4d4e06e'),
-      (39, 3, 9, 55, 55, '232dbf89d0e92fec24a30c84cedf3313b8e8c451f22104c11a1c4377e571771c'),
-      (39, 6, 9, 55, 55, '2628bccfc229f0b8b998c5b4a0321f83c6f62d31785d21bddf4256f7e851c7ea'),
-      (40, 0, 9, 56, 16, 'b376679df70fc00756fc58803d1182a2433e3d48dca46271be119e682a843661'),
-      (40, 3, 9, 56, 16, '4d543005d7875e425292ab3a03a1cbd3716628ce1219913a423f6950673685d0'),
-      (40, 6, 9, 56, 16, 'b0c6e0033f1f2eb09f7017c7bef99d3905094878d51af055bd72a05e91f84771'),
-      (41, 0, 9, 57, 17, '8dbdb21b6a2067abed2697673eb4048d44ec0ac7eaf1e7972265e7718c2461c7'),
-      (41, 3, 9, 57, 17, '9dadbce8af6f63dc28c75eb5e8f70b0973a891a715b3e3ca9265cee2ec1119ec'),
-      (41, 6, 9, 57, 17, '5c37df3c677e90e8e4b8ad760e7a9d7122e49e5f8403b2b369e2c331a15bedfb'),
-      (42, 0, 9, 58, 18, '2088f95afb21412ce9b2c985617aaaea649044d5562ac6752df8770d3c76134d'),
-      (42, 3, 9, 58, 18, 'd110b9607622a23592b492b42e0ccebd9328b25914e4f61480a088dfd8473d7a'),
-      (42, 6, 9, 58, 18, '331ee14ea9e707bc7de301bcfa7368e21fe45aaaae3ace7c7532086dac16f80a'),
-      (43, 0, 9, 59, 19, 'e84e34dc4b0f15c87307052d7aa48d70a851cfa796e8801cbc2c4d576cad97e9'),
-      (43, 3, 9, 59, 19, 'dbc3a5cb51ab019ba1ec9dd841bc5584c5ffdbf99373f187e0386694680dff96'),
-      (43, 6, 9, 59, 19, 'aa1a6c4ee7805d4fb8bfb8723e715a1679c26189043dc0de91a3432b97274e0c'),
-      (44, 0, 9, 60, 20, 'aa3cda610485f81e633e41b84f8b108da189337596527d7e82b65144132e311c'),
-      (44, 3, 9, 60, 20, '0b249ef8a0a61392989855f01aada4462728d4cdc34147165767a1a2b66d4d38'),
-      (44, 6, 9, 60, 20, 'f023a645b65fc073fddad85eb2a7fdb011b49acb4e00f69c1d4a7cace4b6e809'),
-      (45, 0, 9, 61, 21, 'faccdb6c764dd6e266bd72bacb2fb3443f8b79dbc220513d13c914da52d79cfc'),
-      (45, 3, 9, 61, 21, 'b7e9bb82ffbdba377a7d80d6d50c2b245134028581e8788ff73cf6673398c903'),
-      (45, 6, 9, 61, 21, '535d009cf1eb24cd490dc0b9372b61653ced07f533cb4d0aacb0badf6a182ec7'),
-      (46, 0, 9, 62, 22, '6fe1806e79856aad39ff3a3ec3da326f3ed3f76013d34d7078763f44d62593f5'),
-      (46, 3, 9, 62, 22, '61fce86c9ee6f09b00a6970e9ce448658aa4efc70d9dc52b69e214fb11803983'),
-      (46, 6, 9, 62, 22, '9154d0d1abe116a73cf1ce17f90261f32a4ee82b47f1bfa0968c394b8de314cf'),
-      (47, 0, 9, 63, 23, '7af875c080872235b2f205194d12085ea60120beae0c46e90a78aabb2611da97'),
-      (47, 3, 9, 63, 23, 'c8dc468cb50f3c5c32299b5ecf5ac7857b3e80b712dc5545a1b896681be505e0'),
-      (47, 6, 9, 63, 23, '0b883d0b25e89f03d7a899473a8a663fe54fccd66ff0220c2f88c8328fead8e6'),
-      (48, 0, 9, 16, 24, 'fa7613f84cde3ebc469a327e00ae772a647f3e6c0237e368e1d7e42cb3f67c3a'),
-      (48, 3, 9, 16, 24, 'bdbc57a5a5ec359cf039e38c83adfed0f84dd6b0dc365d29b24d8458b88ecf4c'),
-      (48, 6, 9, 16, 24, '551dd18d551dac9be38b64395d45c5f7c7b3d1f1845097623fbaaa32c6a25f17'),
-      (49, 0, 9, 17, 25, '5abdd05bcd748098c718c61b74ffca55333bc9eee7b0b2c86a3e3ca05a29942c'),
-      (49, 3, 9, 17, 25, '0a515ea12cc55129593e6b7c30ccc3007373568db556c065e7f4987e94ea4876'),
-      (49, 6, 9, 17, 25, '435bd382ddc22bdc3ba6761c69bb52dd92939dbe748e41947228cdaf5e805b53'),
-      (50, 0, 9, 18, 26, '96119b1e8840431f42dd80a1d129f9a79ed0bfde6665f41103b569c15915d38a'),
-      (50, 3, 9, 18, 26, '1ec0b9fec820dd6fbd77d825f9071bc8a1a793f2c714a7b539f8dd3e2aaab462'),
-      (50, 6, 9, 18, 26, 'b0ae413da840ed115d4339db976ce9234b1c570a074d56ffb2a3a2cf2f036fa0'),
-      (51, 0, 9, 19, 27, '6adf155578c74ab47ebb50eaa9011dc017a6137c27ef5f987072d9c3012b9994'),
-      (51, 3, 9, 19, 27, '910e3f298620d5a8ded66f57032b78f4dd0a202b63578f44a72a9d2d67bf6190'),
-      (51, 6, 9, 19, 27, '3db85052a1f54481fea8cbacd6713b18702ebed1d20e96b22581133e49361b20'),
-      (52, 0, 9, 20, 28, '158218014d9bc35b565f0beeb974d059a49c86d31dd24d913d68ad4068fabe7c'),
-      (52, 3, 9, 20, 28, '08473f986441151a57de1e006b02b414d740a3d3ccc4a27999473f11491a3df1'),
-      (52, 6, 9, 20, 28, '10feec623acf88e22a0a8af7ccc1e7d21438c8f2f710c9871da12055a9ec65e2'),
-      (53, 0, 9, 21, 29, '7285a406223a2da3dc6452830c784aaf381c2bef887f1196044cbfb06e0f732a'),
-      (53, 3, 9, 21, 29, '3c3069bfea3f89c3b74150b0de54390cd514378eedefa8b07833671224df9256'),
-      (53, 6, 9, 21, 29, 'fa71f023cdffb2acd89235125df9a67c0914a96a71b44aa465eb6fc910451f59'),
-      (54, 0, 9, 22, 30, '5b394734dc67f65463477f9b02eebe1671a68ec7b2e55f544156c8e46507ae3a'),
-      (54, 3, 9, 22, 30, '519e294008074f9ad42dc74bff6ab7d6588b6fe46c2c8fd3a34e203a63b2a4d1'),
-      (54, 6, 9, 22, 30, '16f4ba5e3fd30dd411293cb1c15b6e2e186e635d8f9500296a894690bf879934'),
-      (55, 0, 9, 23, 31, '1228f32113a078f587e18326bc8b8409ab1abc73562c13931d0d3767ba77145b'),
-      (55, 3, 9, 23, 31, '3bc7bfd72caba3ce4b90d8d8c22b115871cc4c8316e40d111f88bf9531c48007'),
-      (55, 6, 9, 23, 31, '9b46b7204bbd0c878e892518cdee8fc9c4055b98219dd2fe9147f68068f66034'),
-      (56, 0, 9, 24, 32, '0bed753309d414baf564eda241fa1627575927c7efe92552f3fb9956a4297649'),
-      (56, 3, 9, 24, 32, 'e6ec2966f5cf0fcfe201f5762dbdcf2c4ec3e3dc2ca2e70d7665e295e069c1b6'),
-      (56, 6, 9, 24, 32, '04be33115728d25d8b89ae08c6073a6043c14e79a83b9596b08efad545f71f31'),
-      (57, 0, 9, 25, 33, '9fa91f3fce7341843e48ceace516bd08da710e7cf5074fcfe51f12377db13438'),
-      (57, 3, 9, 25, 33, 'd9b271d5a067594a6dfc1170e1a60c9aa5bd473e2982333b7bc26980724bc377'),
-      (57, 6, 9, 25, 33, 'eac2961ea609f2e6eafe50368faeb46d2da765fc609edfba69278b2c03f59bec'),
-      (58, 0, 9, 26, 34, '5e96039dcfc56f38422a36c03cfb810642de6df810825ec6e358e88ab0e8cd2b'),
-      (58, 3, 9, 26, 34, 'd35bcbee9d2fc86f3f2e290e0bf5d6deeaef42f9adf25713239cc5c4ea4bf394'),
-      (58, 6, 9, 26, 34, '1bab0d37e7f0098941e372ef4a45d413e7cfa8cc01760cd3c38ad7a57edda867'),
-      (59, 0, 9, 27, 35, 'ca9800db715e24bad76ffcfa973242dd0b9eb7d73b51f1faceb69c412a0c5e4f'),
-      (59, 3, 9, 27, 35, '9ff75062bbca0570cb8e72ac45332ab80e71ede5d964b67a784ef73e9c90b392'),
-      (59, 6, 9, 27, 35, '8265c450c7daff3c1e9778d11a048190222975ccb6129a0783feec0f2fa54174'),
-      (60, 0, 9, 28, 36, 'a721509c60a5a76bbbc11ceb92823f21b2b9f5fd000d18c602f715221b903ef9'),
-      (60, 3, 9, 28, 36, 'dcbd9ca2e1781415b9ec5788e690863dea5612664beaff3389e5e1d892f4890f'),
-      (60, 6, 9, 28, 36, '3fb5156ccd5583ad79c81cdab97382c2c899e4ae2039083f67c302e5315aac24'),
-      (61, 0, 9, 29, 37, '9a2a7d7b54434c1d86c9efde7c86fbcc29a4e3d0d19d1cdb3c836347871022cc'),
-      (61, 3, 9, 29, 37, '557249e1ead2188dff8329ae26849535dc10c872ddb651cfab353c18cb5af861'),
-      (61, 6, 9, 29, 37, 'c54227ad4c58c39eac0572bf59d3a8b514b63ba4402bf71ec9e694607f8b9863'),
-      (62, 0, 9, 30, 38, '4ff3e54d4aa752cfd3e6a06dad92c426134708b684b1104ffce983f893a92a96'),
-      (62, 3, 9, 30, 38, '2b59123ef34cc7b768662a4dfb039c8500a6accadd58434fb8fca082b6ac2e20'),
-      (62, 6, 9, 30, 38, '6245c6d5ec6c392fdaba7c4e19e4f5c278d72be9329137fd56724ea22e98c203'),
-      (63, 0, 9, 31, 39, '23cbe3b187375fc3d87f8e548fae99c6badebe003507437099d575f75cd114ba'),
-      (63, 3, 9, 31, 39, '4ae5f7b939a9a9156c3b42494f32aa3b127228c5eac6e2a804b189cb25a02b56'),
-      (63, 6, 9, 31, 39, 'af803631fc1cde9efa98cbf705afc2401f5762407a2300737558885d748e315a'),
-      (64, 0, 9, 32, 40, '1750967e9c5a103616d7403621019ae76be133a01c1dd6e05d511f80e7fbc43b'),
-      (64, 3, 9, 32, 40, '1869a6de2f4a0514bfd241989aaf2e2489aaeab26229e467ecc3af353ab0e296'),
-      (64, 6, 9, 32, 40, '4b3a8f5b5b90bf596267168561aa67b7429390fc1fdf256ecce0f8101c5d1c05'),
-      (65, 0, 9, 33, 41, '86b9a854c26d65d8654ad4bdf99e3af46736cfd2aa52f31441600863e48990dc'),
-      (65, 3, 9, 33, 41, '68e6a246a467baf89b5b52ba998b1292e42f4388825e3ad9c492fe31b83f0646'),
-      (65, 6, 9, 33, 41, 'fb2389d1698d4971c1d05d5c4bcdf88489b9836f60107ccba830c8509c0cab8f'),
-      (66, 0, 9, 34, 42, '55a4a359e245c8ccbc9c3772073270ff80c0829cc453ba359c3ac62bacd47fe7'),
-      (66, 3, 9, 34, 42, 'b1af01c8b3fad6f922583311a6611fec0d4900bece3776823174ba33b6d15bfa'),
-      (66, 6, 9, 34, 42, 'c32cb8b4b586513d2c4e25b007bc16a85931b665b2bb3ab723c7a6f78290bd21'),
-      (67, 0, 9, 35, 43, 'a9e9f34f84af6a9cea23e5a4e310b41452200a621904f3c45cd3ec9ec6c2a07e'),
-      (67, 3, 9, 35, 43, '39f36f3bbad047e2d06a68dc681ac6cae46dac9b18ebf8c7a76e663150faf64c'),
-      (67, 6, 9, 35, 43, '06bc29c869a670058d994e6f0ed24ab5f98cdf3a3ca35d78cf9424170f16e179'),
-      (68, 0, 9, 36, 44, 'ed7b3a76d5d4447aee2fd7e5f638ffdfe172c0acbc7534a07a6a5c93d972de31'),
-      (68, 3, 9, 36, 44, 'ad14d7cf62a608b0e3d5e8a8ef5335c202a66f1c21d6a232879d44138cad3a97'),
-      (68, 6, 9, 36, 44, '6bc089f90d6103029d4ae2b126ef8476c274963a31408b6b93339a1ef54e2a9f'),
-      (69, 0, 9, 37, 45, '631293f717c19489de28ce1175cbca7a0fb9abf3c09bb81ef183233c11b26cdf'),
-      (69, 3, 9, 37, 45, 'c975fe95a7bfd2f74c875d837734ed3667f39b1300ce1aafa5057e60f8a0d88b'),
-      (69, 6, 9, 37, 45, '9c6f116cbe663819ab933cb56929febe0abaf7162f829cb775afd2f81843d071'),
-      (70, 0, 9, 38, 46, '5527ae914e2126800cc79f48aa56d9c76d2ddb552fcfb3ae66ebd0ca51987d36'),
-      (70, 3, 9, 38, 46, '8ea93bb7643fafec8cdd413bed5bb4dbd93e82aad39bbfed57cfbf600e192d8d'),
-      (70, 6, 9, 38, 46, '95815902def3109dec348d5c3f555e892ea3e582ef76cc32536bb1ff3ae7d4e5'),
-      (71, 0, 9, 39, 47, '6b1cfbcfa532f8898f2d99d3d38aaee417d58821cb2ee92f26ff227c89d58098'),
-      (71, 3, 9, 39, 47, 'e59862b0e0a0919b461b8e5c8ed9f92a8eb31bf02b85bef3e16ad8dd0bd54708'),
-      (71, 6, 9, 39, 47, '4153c2d5395c62374155b9b909c74ae11b55032828aac63b829b41dcff9af35f'),
-      (72, 0, 9, 40, 48, '7a3741d4252b0c352794df060203a360ddadc1fb363dbdb720a9efe2906105b0'),
-      (72, 3, 9, 40, 48, '0a4441d6c8e8601e606cc0454e7600f31f7a64632bf5e44219be212738a37d5d'),
-      (72, 6, 9, 40, 48, '6805870ac7e60a876631532cc7bce5982c74134d1c8af3da7e58782852d2a4e9'),
-      (73, 0, 9, 41, 49, '1d477fa13cd4bd445fd3cc38c991a0734855f73a6d7f3e519f74a8ece74417b0'),
-      (73, 3, 9, 41, 49, 'f6154934c8b1f716d6515a21f04263672290f3e3f9dcb7bea1d9a4ee2e50bb88'),
-      (73, 6, 9, 41, 49, '230f130df28fd8b3e99d71cfac09f75c0e7a9c50fe58111d08c856220b44302e'),
-      (74, 0, 9, 42, 50, '6ee3f1907452b3fb351a67e03f0f26467ee9092bc863bbf7dc2b6d51ad22156e'),
-      (74, 3, 9, 42, 50, '36405d492e6ae0b4d51d9f37fb0808c123847ac16fc00a8ec93e90e5592d9c38'),
-      (74, 6, 9, 42, 50, '2feda3a79b8f5af2ff3c02b2c4ece79259e3d2c2c4dc764bdd30adafb7519a33'),
-      (75, 0, 9, 43, 51, '4534838c832844fe65fd20a583cb1240d39c5969ed1b63ec6fc30b5dafaf973b'),
-      (75, 3, 9, 43, 51, '44f50763ee5d47b7bca02d7b94d01fa6c35ecc9d4e56df299cb9a9c265e191e0'),
-      (75, 6, 9, 43, 51, 'd3a61c9691cf1c18c7fd662cc2f18238996700fff7d0edcfebaa700cd6618de3'),
-      (76, 0, 9, 44, 52, '39e908402c9f8c5781fb47469d1bf746c14d704786a0825fb3d4c46271a08684'),
-      (76, 3, 9, 44, 52, '38f871d78fe138bd2b9304d7b5362125a930d5afb85a37a2bbf38f19d12832b2'),
-      (76, 6, 9, 44, 52, '01eb702da8e48cedf2a8a861b3beb6144df28ded2bfc71774543428f56721cef'),
-      (77, 0, 9, 45, 53, '9d91d3a1120fc0c7da8b222f566ccd0ecafd3dc16f662b72c204c776b2f5f358'),
-      (77, 3, 9, 45, 53, '8978687db0957c1dbe3353c42d640d1fb76f914f979fda768169d74f8abc194b'),
-      (77, 6, 9, 45, 53, 'fb3f7566ebc87105e321fa8de4f59eb25daff8691a15e2536dca631ceee8cea6'),
-      (78, 0, 9, 46, 54, '23f22dcc3235881a3940b7cdec6792c0f053427a694747f21514d6b225d166b1'),
-      (78, 3, 9, 46, 54, '35cd228b4bf0cbbff96f478bae471028c10a9f271722e339801a4775c7015f80'),
-      (78, 6, 9, 46, 54, 'd203e4aa1b587fa319cbf87a6513a545e50f528531a7157ad42146514580ad17'),
-      (79, 0, 9, 47, 55, '5d21989acc6889569ea553064b9958d6ffeff82c2de85421f8599dea49a7e476'),
-      (79, 3, 9, 47, 55, '6274a2314b4f78e210dfe3965dd1a7ea7f82b8a844e4bc57ea28fb079185dc7e'),
-      (79, 6, 9, 47, 55, 'ce9fd857c4fe0586637b0c340d1ffe96e56a2132d746aef60585df8afffb8882'),
-      (80, 0, 9, 48, 16, '68f020bf50aeb00a04872f04f8f39d8f7d470e935f2e061e597543360596bff7'),
-      (80, 3, 9, 48, 16, '62f15caca5ef32d7250ab7849f9a138fe4dafdd45ec00f80df6631151e4e3691'),
-      (80, 6, 9, 48, 16, 'eb90e0dc55b1f8a9f7b7569b33d09097c2b9a61d0b5851048f39e858a5212fbb'),
-      (81, 0, 9, 49, 17, 'f79722e8faaa8aa36746b6d5a54ca9b221fce31f73c69616440bfb049e87f7f1'),
-      (81, 3, 9, 49, 17, 'bb62010e5365f8f0798c858e87115abedb9f459f9f11c4ab9eca27b76d1cc971'),
-      (81, 6, 9, 49, 17, 'e9d681fc1a63d3115296d197818fa99f21ff6a2ce05a4435b9093c3b3c437936'),
-      (82, 0, 9, 50, 18, '819fffa21e32a5c32c37ec00a2ee326bf5dfe25d76e43c7c2b649a12b80c95e3'),
-      (82, 3, 9, 50, 18, 'ad3255bc87eb4ecef869bd7de9ef177b86a9951a8aad6f37c9287401b4ac1473'),
-      (82, 6, 9, 50, 18, '6f348e9aff6799d3e5beba62ceaa1c1f31428e06d1a9dc18bd5bf364c0f0241e'),
-      (83, 0, 9, 51, 19, '7ea0d1349fbd6e31d562b2c8486cd4e73df3daf1c8c63ba8a16382792fcc84a8'),
-      (83, 3, 9, 51, 19, '24c00a9f3d4b11b2e1a83d32704c37a6e1b5e569e488dcf7dcc4b17805765d6d'),
-      (83, 6, 9, 51, 19, 'ade93aed7fc55e4b08f7c2fa875ff415826b763bdc6d416c52b4617f1200e34c'),
-      (84, 0, 9, 52, 20, 'c9750fd71d827678dfe81b55d6ef17c12453ee0eb05c8acb487bec6791052322'),
-      (84, 3, 9, 52, 20, '219de635026f0f4a07fbd7b687ca70b37f1d1e38686cf770431271a276b700f5'),
-      (84, 6, 9, 52, 20, '53c40a9aa597d7e0009de790a9c6a3c575df9d5a9c200368c1a0f2e5a3c3d9c6'),
-      (85, 0, 9, 53, 21, 'c23e6e1b28206ee891f6e2f0c17a1152ba4b62f991f540acc3876b78ab579950'),
-      (85, 3, 9, 53, 21, '50aaec1f20c6d18d26fc2d4967af3d30942dcfb4819f3e302eeeef19974751ca'),
-      (85, 6, 9, 53, 21, '133c7672751a1bc26e5549b812dda65f0a3fe746f48b952cba06d3d29abf867e'),
-      (86, 0, 9, 54, 22, 'fa14b64a2197bbd9090eada04a10d834a7fef4408bc9260cf299b526880d9bcc'),
-      (86, 3, 9, 54, 22, '8f6c55c79b6577635ec1511ecbc6f78c0989e067ac2622fb7b825fa80151f66b'),
-      (86, 6, 9, 54, 22, '4d5e65f3b0f8b00aac7be9338c117ed6052ba5174d8a20c83381e27cca5a587e'),
-      (87, 0, 9, 55, 23, 'db1b98e74cceecf628ad594caa9b114b1d2fb24edf3a5c0a5042c635c750a87b'),
-      (87, 3, 9, 55, 23, 'dd5a51418365d4674e7ab9f25ab94934d82d5702d1199f23b9676f91b5d747e8'),
-      (87, 6, 9, 55, 23, '3248260f472d04e3d6f29dace769bef5dfcc3b57a147844f2d9dbdd16c8d19f8'),
-      (88, 0, 9, 56, 24, '14c6cb17ae0c5a10c3cd289bdf2f936a6cc64c3c33d2054ef0b5864d1c7f8a68'),
-      (88, 3, 9, 56, 24, '8e8957970afdcd493f91c0c3baea125109fa4dc9a127916812340b5ebb24cb4a'),
-      (88, 6, 9, 56, 24, '552a5cbc2aec3ef8193b64a084977f019dbd9e0dbbc3afcf318ee38f006f09c5'),
-      (89, 0, 9, 57, 25, 'a5c38ff14e9d719675355a9bea47a578debba8ee756e807d117d541fa8589fe0'),
-      (89, 3, 9, 57, 25, '985a017c12f20811761e6c3b1a4fcbdd890dec3edeff563a81370d5222e23b35'),
-      (89, 6, 9, 57, 25, '4c8a3144758b99c348e0256991ea0305de72c619432960238cc9fea24deb6e2a'),
-      (90, 0, 9, 58, 26, '18c399069835981fbee9e5b781689d77d267fee4a182f22c435e73f0ade1c895'),
-      (90, 3, 9, 58, 26, 'd94a40b0b331be9cc4b76dd7aa4a5ae7404c4d3d4f5004f306b9a91944ae4023'),
-      (90, 6, 9, 58, 26, '9323d693082b00d21bd10bec890a338c03413449a27f739459909310ddbda2b4'),
-      (91, 0, 9, 59, 27, '4fffcb25e04286876b0801a3740146766e2abdfe9fb6e0f5b3a4d63a6016aeff'),
-      (91, 3, 9, 59, 27, '129ba30819ae15d49ddbd42e1c4ec85901dc4225ee723474fc00e5c8038b59fc'),
-      (91, 6, 9, 59, 27, 'bc5d856bd497bdf32c7b3c67df2cec619efc00c04b94051089fabfe57a31a346'),
-      (92, 0, 9, 60, 28, '0318b86dce0306e15022116b4855f84a4857e452dd74fed9b90ecf828525f5cb'),
-      (92, 3, 9, 60, 28, '1b28b3340673b97bd4f75ab4cbb4503054828f04a4d83c24589ebd6ea858e3b8'),
-      (92, 6, 9, 60, 28, '19b4d362fbb249cce08ae987b4b94b3a1962509f01a031fbe57d4cc8a2630175'),
-      (93, 0, 9, 61, 29, '823098a7803fd8a6b35ae9d8f8b7d673596b633a68ffc549ccfd5295e02ab674'),
-      (93, 3, 9, 61, 29, '147b66ec1530e0cc9d50806a4a4d1364e36fcac2e4e5792bcff1f48c011bb6e1'),
-      (93, 6, 9, 61, 29, '2adbb2a87c1620a6adb0c6f25b466209b5ddd6ae05333bf0673793a7a1103a1b'),
-      (94, 0, 9, 62, 30, 'e1d3fa89f0620c307dc46aabae6b84041f1ac9b452fb326d095b9b12a1740ff2'),
-      (94, 3, 9, 62, 30, 'ce7c825540b5eae06edf3b0e69a83a3e88e9086546a55cc0d950de1707929adf'),
-      (94, 6, 9, 62, 30, 'fa20619f0a2c368fb3722a233973d481ce4a5adaa08ae100cbbadccb0e7352e3'),
-      (95, 0, 9, 63, 31, '9f64f1f39279d3a6a3f63b53c169a5d3799544335916f6921f4bf3c2d786bde2'),
-      (95, 3, 9, 63, 31, '562bd8f532fb71b7fd7cfa9bd7cc7d1186d2e26a414e2b94c85125d882818af6'),
-      (95, 6, 9, 63, 31, '7a0aea297e79f28211f06dc554514d2f093ae0caa9507baca52788fc2a3ec53a'),
-      (96, 0, 9, 16, 32, 'd435f644922490082ce186c00c4bbbe55370fff6da07356f1c2c6a6f078a2b30'),
-      (96, 3, 9, 16, 32, '395552329cc173f9554eae17fbf0cd1db9e91040a847aac0bcdf135051476e31'),
-      (96, 6, 9, 16, 32, '04e6e32e16675473172f12ae3c44cbc750091c2d5f8bd41bdf420c44e6178c2b'),
-      (97, 0, 9, 17, 33, 'c8740dce7c1f40f8c5e5099c7b0634f313dcbb49e0ea030a24d5b8e118734163'),
-      (97, 3, 9, 17, 33, '7b06030a46cf296df4e30998f126b6a06c337e8d5a744c232385f9e1731a9b34'),
-      (97, 6, 9, 17, 33, 'a921e9c0c121c27225c1f41c8fb5027dbae061731aeb19c7ddb1172376145b03'),
-      (98, 0, 9, 18, 34, '718de6ce44eb09af2204362aabfd3384b9c132414bc3b4e79e2933475af33b99'),
-      (98, 3, 9, 18, 34, 'ffad07482743f47570b8991fcb36beb8b8339ce2cb1b4f391fc94860fe9efdf9'),
-      (98, 6, 9, 18, 34, '9ebacf864ae03b8ddad143ce26899b1cb95ce3ad58daa67ed462208ae7c756e9'),
-      (99, 0, 9, 19, 35, '3bc692c035c7aff3356c9351e5354ec95a527085f39ebda0ea780a29c097f640'),
-      (99, 3, 9, 19, 35, '1db82243956ae6393c1f7b95b8ea27942239b7dd0eed69f3e3b2be43025dce0c'),
-      (99, 6, 9, 19, 35, 'd762ad07a72a30ccd4ffb33cb62b28445256e7bfa50fca97c47ce0cac09be18a'),
-      (100, 0, 9, 20, 36, 'e50f05089f51080f856e3c0b2685ef9dc8b1740dbbad8e614d73dfa4c3266290'),
-      (100, 3, 9, 20, 36, 'ec42b3b012d558684d9496bddb54bf7b55d62a5b56535af06cf5b7604f3da6ca'),
-      (100, 6, 9, 20, 36, '4f91cc43069b89561d54c2d5299b7dce0f4517a9f32af890a99a38e8e15bb90b'),
-      (101, 0, 9, 21, 37, 'f0ba6132ce731dc4bfb2238356b72a666e7b48fe3c05e10382544fad15604895'),
-      (101, 3, 9, 21, 37, '2f2e993155944157b2019ab4f2387c6acf7615443e72edecbdc5bb5880b16757'),
-      (101, 6, 9, 21, 37, 'cca6d4291c1357ec09bcea7cbe447d7d6fce002fed45c2438b476bbb9369401e'),
-      (102, 0, 9, 22, 38, '00a747eaa132d7c8a3c09f11d4acc3d0de2056a481a9371dec78b1047dce6ea5'),
-      (102, 3, 9, 22, 38, '0fad0a5b64e60cc9101f44b5a7b1c1318e5d310216bf1a582a44ed3a2082bfef'),
-      (102, 6, 9, 22, 38, '5ce66e6e39a0e474f7457fb87dd02b2afdbc8a76d7769ebe521505b07be47178'),
-      (103, 0, 9, 23, 39, '0a44123e28bdbede1ce730bf84ff6462c67af184e939d10ce8546059f6edba1f'),
-      (103, 3, 9, 23, 39, '19a2f07f0b43da9db32c72391b54f8c2a222b087e5ad92e893489aae9b2a42dd'),
-      (103, 6, 9, 23, 39, '1342059f7f9a824e0d0d03cf542db9ee33d3a0aa89e0b57e9cc283ab9eb788b3'),
-      (104, 0, 9, 24, 40, '587766bc3249b80c9fc35ea06cffb996079cd0673483480bc83c72b4e96ad0e8'),
-      (104, 3, 9, 24, 40, 'b6c7219574c76963c260480551e054102d8e4cfb1d1a63ee8339e9a335957d7a'),
-      (104, 6, 9, 24, 40, 'a63c2c187bb796c4aabfadb60ec6b1c76fdd586a0c0b2d2666d5e34c90397117'),
-      (105, 0, 9, 25, 41, 'e42fc03bd95f41d0d7ca6a29c576f8665fda4786862da6a762ce27ec4c0ea064'),
-      (105, 3, 9, 25, 41, '540e0c647db8d694f309b0d25e778ada14f0e14210a110d52f989b2a85c2a4b0'),
-      (105, 6, 9, 25, 41, 'a73c3909ecf1ada4b56acf1f61593a7eff03ded0a43974795734721f06f58d3e'),
-      (106, 0, 9, 26, 42, '63a49e592730d6892df41f711c5b881dc09dd09727a0bf30903fdf8c4641390b'),
-      (106, 3, 9, 26, 42, '79be8d123bd3e7dea41302e7dc999a5ce72118f2a0eb99f5452c3e0a13d643c4'),
-      (106, 6, 9, 26, 42, 'ed087ce086ac21228d3abe7819c659d88a9c7d58e10b5f0753e6bdd2d1fa6bee'),
-      (107, 0, 9, 27, 43, 'd1b6c49588522ebc6df0bc1b1af7afe9e153654ae4f5c96d5237544906a5c514'),
-      (107, 3, 9, 27, 43, '31398a8af6fb6bde43d6ecf657b0ee8d7e2870065856a24208fd552d34289d8b'),
-      (107, 6, 9, 27, 43, 'a9efc1e57207509da598640861c39621054774566425af238d28ed343dba6e18'),
-      (108, 0, 9, 28, 44, '2cb7b33714fab85b60f942fada6f421e1970c76987d65f7cd6be3ccd503d1b89'),
-      (108, 3, 9, 28, 44, '771eb7c954a8693c7c949765e4b07580aae53ccb5310588d817858fbda1f13dd'),
-      (108, 6, 9, 28, 44, '9b8681e08ca718538d63a1866b0927cf0f045fb050beb9294c96477ec8462b6d'),
-      (109, 0, 9, 29, 45, 'c28f6f19280b2ddeca3b3143302fbb2c12358a77981a98a2af4cc8c7c61aab5d'),
-      (109, 3, 9, 29, 45, '2d9281f22ef2518b0636b87e30117bbe8d7262d9847f5099bf39ca3f2af3f5c5'),
-      (109, 6, 9, 29, 45, '9189acfda59a135fe4c3fe830a2b47b866e0d0db65b4d0cd5395d1928ae1ca7d'),
-      (110, 0, 9, 30, 46, '7b10453e3f69c0082e7ebc129f229c5f580a33ee847c9202034e63b4678b9d6d'),
-      (110, 3, 9, 30, 46, '255fef801ecadf7ba0ae2636b89b34ce056b0643cf1bafa8799aa5ab8416d61a'),
-      (110, 6, 9, 30, 46, '1441627fd5c52ddc3db0a5ba1b9906dc73d4c435715d7ffd92bb9aabd723466b'),
-      (111, 0, 9, 31, 47, '2937e3390b941c2c76255ea46e3c7ec7ee0bc230bcd376d52963a8e1e46daeb3'),
-      (111, 3, 9, 31, 47, '93f51739fd251d89a12bd7069901e6896d33e57d00a73766c43aad739ce9e7c8'),
-      (111, 6, 9, 31, 47, '0083c0f1b988d4206842a50b86cd6ee9026b680d5ccdec96d3640d2cea2f5758'),
-      (112, 0, 9, 32, 48, '7b9afd84a16f814f2eadb5d8e8b2cabae35c50b5c6891cc0344ead1a6cc69404'),
-      (112, 3, 9, 32, 48, 'e4dd71b23c4693759cd03bb38f5212f07e2361fe47eb4424931be7b975f95cf6'),
-      (112, 6, 9, 32, 48, '8ca4fbeccd529ea36cf91959b3ffbe023543c9d747d7d7406b0461cdf9e9e3ca'),
-      (113, 0, 9, 33, 49, '3a6156049a83670624a3f0428d0ebf631721327ad0bed8a40dc31f68d96ab1e9'),
-      (113, 3, 9, 33, 49, 'a8442072da8362cf3a040d454d8654dd40995762471ff1361e59ce366cc85bd8'),
-      (113, 6, 9, 33, 49, '4747755b0ba1a59f20361daa77b6f1aad9d9b047dfbbbe4b5f551217aa8da962'),
-      (114, 0, 9, 34, 50, '90fd0f3ede3d97d5f96fb77fb1718ade20bdce1eef5704074415d22566489dca'),
-      (114, 3, 9, 34, 50, 'fa26003fd86bb6c8a232d0a49cef15f24c73800e6a742995bf310edbd107c0d0'),
-      (114, 6, 9, 34, 50, 'ef3d91a1286b5a55f1a6d44a8e0f0ab1deb7ca09ad40b7894529e13b176fca3c'),
-      (115, 0, 9, 35, 51, 'dca7d284fc43217ac6445607ed3b2163fad763297566adfa3936aaf138d64cc7'),
-      (115, 3, 9, 35, 51, '8553d3714295555b3b29efaef55d85d025cdae176d81ce954d5475cf8a8e6bcb'),
-      (115, 6, 9, 35, 51, '0e4d7e3b71329a12eb2ce4562b78b8bc1c4b192e47c0b2397d75da4a1aeeb620'),
-      (116, 0, 9, 36, 52, 'ed2df4df560ae35f96e06de8c8ecf0b20438266c17913a164ec813550c2f1e1d'),
-      (116, 3, 9, 36, 52, '5bb84bf0f5dda5347eb235b0b79a3ab61d595b8d2660d8d6c32b68381122ac5d'),
-      (116, 6, 9, 36, 52, 'ff1b2fabc8f97027dd0ca24c01877998d6d940821548c94499633428417f9dc5'),
-      (117, 0, 9, 37, 53, 'cd254bd7bd616f014d062affd4bf30a5a9ceab7707605d1d72f147cf1a5e59da'),
-      (117, 3, 9, 37, 53, '53d8c843cc005cc5872bc10d68e14efc3fe5f059c5a7fb2b1af58161e579bc65'),
-      (117, 6, 9, 37, 53, 'f41ee438b0e249910719622bb4e46896f7e625d3eb65f92a5bdceea208f5c12c'),
-      (118, 0, 9, 38, 54, 'c54e8f87bdcb3cb4c62b0e62902137b3dc9c57192f9aa421a1d7d904b9d9bdcb'),
-      (118, 3, 9, 38, 54, 'a60b16cbc6fc47de9017137f87a73d41239e14346f9a42d82528e5a1876d4b36'),
-      (118, 6, 9, 38, 54, 'cc70200e78367c2d0dbe7932246237f90bbf1f2eb559b2b98edd2a71c3b0b744'),
-      (119, 0, 9, 39, 55, '2951628a98327a9c6358972b64406f3344a40ae64ec40937d37fa814327143e7'),
-      (119, 3, 9, 39, 55, '87940fd9f8e84d794f5c3363cdfccb091a86356bd1d6e9fb321866f824aa2b8c'),
-      (119, 6, 9, 39, 55, 'd341201c9bbbe8ebb452b09ca27827690c7de2584c80cba0a59fa9e1ae3cc626'),
-      (120, 0, 9, 40, 16, '969fff50bcde4211daff0b3c7f3b5a49d29dba1c4e9b2b3708d54839fcba9ad9'),
-      (120, 3, 9, 40, 16, 'fc891fe927e275767aae98919e5233e10ec90495cd058299408a52625e289354'),
-      (120, 6, 9, 40, 16, 'bf287fb459bd4c393f7bbb44e7c9b2712da441d6b68337db921a4d2b6027ce98'),
-      (121, 0, 9, 41, 17, 'afd9e97e2bf1c4406ce13ac0d812bcf419f8261b5d2558c3634f9e293b14b84a'),
-      (121, 3, 9, 41, 17, '445ddc53fa96e6b10cdd49e00e8000c8893f56b16de3a25e87249dd9dac2bafb'),
-      (121, 6, 9, 41, 17, '423c71b2a4997c6536910f90c9d1a558f5f6a52680188c0b406babd61c227cfd'),
-      (122, 0, 9, 42, 18, 'af74c3e02101ebbc0382cfcc5cb963b56d6b1abc71510e1858ebd9c1cae39fdf'),
-      (122, 3, 9, 42, 18, 'b068ed5f3d3c69bb4dc26623672441bcbc04bf4d6aad9f9636fe522d32808578'),
-      (122, 6, 9, 42, 18, 'c1e82928161d1fa9a4afdb6a945458e72e7ccf8d1eb375a8abf226bfa5e1a51f'),
-      (123, 0, 9, 43, 19, 'ecf36c9b8efa998b06adf5167c1910c74f9e0301b267a313a091b5021a0349b9'),
-      (123, 3, 9, 43, 19, 'dc4acab29e207b6550b65a762243c2e10624c235436f71c627843179bc9a08eb'),
-      (123, 6, 9, 43, 19, '21e816858683d51e9b7a004346f0458ac2be03938ba0ecbd922bc3e6c46b08a9'),
-      (124, 0, 9, 44, 20, '88d99b7b36eb92fff767e76a1c711394b3f873c67e9c25e082d567186817d6cd'),
-      (124, 3, 9, 44, 20, 'd967a2debd955ddc7f5179d9a5bc6524ea448f8f44ad784368a7885363780195'),
-      (124, 6, 9, 44, 20, '18c48f30f5f9d44ab4224bf6b3d3928d77af916f15001088f7ad7933c3feb264'),
-      (125, 0, 9, 45, 21, 'c9dfd4603b35c39df1304c51245db19a2ed9894f14a39b11bf8ddb86bfd5f8f7'),
-      (125, 3, 9, 45, 21, 'cbd86a79f8536fda17d6c6653dbcefda7741c14fcb43f5d17f0f86c4ff77d7be'),
-      (125, 6, 9, 45, 21, '86a5bec9ec2f055d77dd9a4911a056a72f6facb8b0ed4864a63db4bbec040c38'),
-      (126, 0, 9, 46, 22, '57ab134bbd06d6f8812a275b953e802b8e51ebf2e36cb10f334bd3a1eb418404'),
-      (126, 3, 9, 46, 22, 'bb417f73bd87e99e14558cb12b0f2468f5a679158d41b35fd4e37a0d57020c15'),
-      (126, 6, 9, 46, 22, 'e757258a3e9d3eb8fddb5ecc74dfbf487497d802833185becb45ebd9b71890d6'),
-      (127, 0, 9, 47, 23, 'a350b8a33871ace19c1453ac1e091dd0111bafe65148ae836165f7422128a1bd'),
-      (127, 3, 9, 47, 23, '91910cb1b2c4677791cf749b2326e717b26d63927402b413fa6cde39721e4ec7'),
-      (127, 6, 9, 47, 23, 'c7554e57e9e8790f8b1b8a7f16a54e4a31a8c20587ae8e0f0d7950f32425dedf'),
-      (128, 0, 9, 48, 24, '8377c0986399dee7d6a515e0ece0bc7285ee99de1a0a08ea6cd7cc555cc45fbf'),
-      (128, 3, 9, 48, 24, '3f70055fab97905087607c6457d163e79b93a47c84b094c60f000f4a9e06aeb1'),
-      (128, 6, 9, 48, 24, '1abfe45e849b3b0d9a8e6b142c11b1dd2e0410fe7ad75fc1ce1b5bff6c160df7'),
-      (129, 0, 9, 49, 25, 'e0678696f9a508beebe7a520da246222f1d7d548bd5109936fd0468142ab0fd2'),
-      (129, 3, 9, 49, 25, '96adf5b36ed4c926f678f8687efe3d2f2571934be03c03794408d3fa00d5454d'),
-      (129, 6, 9, 49, 25, '158d48e81cc7f02260d945d6615ec49a72ae682f922e9764bf25b756619d5997'),
-      (130, 0, 9, 50, 26, 'dc9783435c2ccc2b0626213998071c3341ecfee0d52f2b487aa4fd3d5823e499'),
-      (130, 3, 9, 50, 26, 'b06f13000bd8afafb08d463b8d43845f36a7e2ae6493bdafa5a21e541284b39f'),
-      (130, 6, 9, 50, 26, '1efe932891f4b4cc748465ef9a198424aed5b95300bd12bf4735d0180ce772fa'),
-      (131, 0, 9, 51, 27, '88fd1b8d82ce09fdc4fa2373204470d1f2162a9aafa9dfc0d8f59c318b3d03cb'),
-      (131, 3, 9, 51, 27, '9b9dfde71a3d3e0d404fd3b5deea9a3c9ade394b80364e082a161667d3a26805'),
-      (131, 6, 9, 51, 27, '66dee915908a109016ee0b45f8463006434395dee206f5a24185bf88a786f775'),
-      (132, 0, 9, 52, 28, '91f610f5a189487a088b8904ffcb1501ede3990344cb6c4e1dce5faf65c46c69'),
-      (132, 3, 9, 52, 28, 'b0d3c4389c4fd23ce7cb066068e49ce4dcf55225c1a9089e042d9d988a34391e'),
-      (132, 6, 9, 52, 28, 'd051f8b150c170d97f9d3dd0d07adee6ae8c243752ba0fd332c390c5f20ce005'),
-      (133, 0, 9, 53, 29, 'f46631cc554116a5a076770d3187fb544ee9556b3ab5ac8d536cd5b374ea5254'),
-      (133, 3, 9, 53, 29, '2471b4ea9fd24f5312213ac725ac9c701b7242f2248ef148ea438d8bc7676d21'),
-      (133, 6, 9, 53, 29, '6b2223b87893842ec5ff2adea74a8df84a288962452110ec5387e09ff5fc22ef'),
-      (134, 0, 9, 54, 30, '47a7fa0f198ca1283ad679c4d1033cc58d3d68c7920a1153fb6ccc6c905f79bc'),
-      (134, 3, 9, 54, 30, 'cbd9d7ba7ac6a0cd00972c8960b4c3c56cdf3a526a26eb1f3bf4db3ac0e0021b'),
-      (134, 6, 9, 54, 30, '3ea3461b2cfd3e59628adbff596af8596353831902831d3dc881669ecf308ad1'),
-      (135, 0, 9, 55, 31, 'a60f50d4ea6570811280de3f6f124944c323a45a396abdee4948c6632e82ec0d'),
-      (135, 3, 9, 55, 31, '5c46abcd1056ddc25849c55881fe597549d248694bfd460b9aedad80b683e8af'),
-      (135, 6, 9, 55, 31, '8d4d881a9015e4954bf88f980e4ce142516ce20cd16c0c80e748d5d612de563a'),
-      (136, 0, 9, 56, 32, '89f05ca7b5718dca2e25a191b97dc9c3649d17af10ed70f689b4efd4df36de75'),
-      (136, 3, 9, 56, 32, 'ddd62bdba7747b0bb814275983c1d3d199e81c69c5d0c63eeea389d8483d763c'),
-      (136, 6, 9, 56, 32, 'f8d4dcfb72adfea7fdf67f99e8197ab287a53a530e686a76f10b891118fa6102'),
-      (137, 0, 9, 57, 33, '6397dea6638fbea535b505c3e128568433529179e36b5138a71b97a84616fb13'),
-      (137, 3, 9, 57, 33, '8b359f6b8f7d578f71046a9a0f6f7d6048b34004e347e4552f35398954ebbef1'),
-      (137, 6, 9, 57, 33, '4822a7d54d985b6eb7969ab61742660c94c0865cc8c681dd46e3e56396dbddda'),
-      (138, 0, 9, 58, 34, 'ce2ba1215c3989db29bbd18b70b89a957ee3ef6724931a02f0d11812abadf750'),
-      (138, 3, 9, 58, 34, '8e6a831e2ac4655c23f10faad7bb41efc241855d0157130771babdf2168e3e3b'),
-      (138, 6, 9, 58, 34, 'ef20dd95316b9a36fb28f1aa7bbec5af4c48e0c04086cc6fc663ca0f2f9f17b2'),
-      (139, 0, 9, 59, 35, 'f2855fe6addd308c361344446a74e8ab7d300c13f2802847de1f943d87066dbb'),
-      (139, 3, 9, 59, 35, '91594cbe5160d1408e18ff80395fd1973a8e04fb449fd5e76e6d84b13c26c239'),
-      (139, 6, 9, 59, 35, '238bcc44e4a01c519d442cd541378692055931b686e9f9f39ec884bf56f4484e'),
-      (140, 0, 9, 60, 36, '46b73e4ed410a8ef7d923b9e97d838c0d3ab34a9578c73195a2603a42f3eddfe'),
-      (140, 3, 9, 60, 36, '454d959e36c2d66dff37e0ee125bf5149d5ec99e7c7a6b5e66cd919ac141a1b2'),
-      (140, 6, 9, 60, 36, '73ebd93d77fc7e5c478244a09fcf20758f1698fab6c7f2c043b123d201da8602'),
-      (141, 0, 9, 61, 37, '58836f681640b9cb9908c4c092ca88ae98528be5722fdbca05496f4b642056a9'),
-      (141, 3, 9, 61, 37, 'a6503d912dc387e9e17b256ac5cab5e4c1cc83478aa78c5fdc85a7d82a0b671d'),
-      (141, 6, 9, 61, 37, 'd4fbafea5dbb2a94c238cdd21ed6390d931961cabef515b494d26431deb94943'),
-      (142, 0, 9, 62, 38, 'e4292486761589b9bf2e0117b1f3d8d1b37e1aa23232ed1bdbc205ea8a8c8568'),
-      (142, 3, 9, 62, 38, 'b8b45d624d11852c0cecbb65a2dd67d0f983f40a41f3cb6446772b14f83a3fc2'),
-      (142, 6, 9, 62, 38, '8f00a058a9cf87f1d85e38f321500dcdc5e4c703ec24b077ca4eef24521ee5e1'),
-      (143, 0, 9, 63, 39, '3fdc5619e34a0124605d6042d9c090883bdc7d7474d5d498e34eb086be1adabe'),
-      (143, 3, 9, 63, 39, 'c1b310b8511007cfe6ea5a61502522efa2f25f071665c2ee7bca8b84086972f0'),
-      (143, 6, 9, 63, 39, 'a7fe2c0b8c42aea06d2be0f225d2d3bf602e544f7f1d3e6efe8c39b39d881df0'),
-      (144, 0, 9, 16, 40, '854d91b38378ab632657e5d9ca58a9635801152516274233485e2fec8e2b495a'),
-      (144, 3, 9, 16, 40, '5accfaece944999a6e50408cbafe2e5e4f62fce297675746a017a082e37d9789'),
-      (144, 6, 9, 16, 40, 'c46ff1baa17dab3754b5c908f610739f857a0874dfbb3883ef674dfc41dc4e16'),
-      (145, 0, 9, 17, 41, '7a0acb97bfec6101e4d13a4d031659da5a66947770cc1e7db13746c789451223'),
-      (145, 3, 9, 17, 41, '4e0300f2ef8cee202a62eaaf6b8d50dd28c7142ba593604b23d934e48dd23d0d'),
-      (145, 6, 9, 17, 41, 'bf6e8464fad2dd74464eb5a64ee9fdcc0271d8a3466981f00056b58982fa0522'),
-      (146, 0, 9, 18, 42, '8a36a5f5289c255e889f0296aff90b3f64fe446e7efa6d696d25b0a975383221'),
-      (146, 3, 9, 18, 42, '358b7d1e4cb9501bc98ab47eaed37e265767577cf64ac26af37065893395106a'),
-      (146, 6, 9, 18, 42, 'e3f84ddd215b822d08a05431be3466ae8eb647b2e8f2153e677b2957a14111d8'),
-      (147, 0, 9, 19, 43, 'b9a728f739687b4df1b4d469d3e89ac5172ff414a10c8bdbff3f1427a0491d66'),
-      (147, 3, 9, 19, 43, 'eacb57c058886447d2a7f8aa1df0db16467c3dda7c18a948309abdf8848a3b66'),
-      (147, 6, 9, 19, 43, '1bbd76e3093eb414d8248d4db061daa78b17b5d4fba68197c0ce16f8bbe0206a'),
-      (148, 0, 9, 20, 44, '48708ca2c6a9c2c233e22f24d79d532bcc0abf04efb97c1f9584f01a91d60226'),
-      (148, 3, 9, 20, 44, 'd8839ff4c6e092f71e364702f81cdfdf3d5c5d43616932959c1955397456b3dc'),
-      (148, 6, 9, 20, 44, '0e05bcf92896d3749aa7739a2c74fa33d031decaffe34c1bfba8ce5af3808fca'),
-      (149, 0, 9, 21, 45, '666288b8426677f15d17b89a6ed42b804b1abfdbc20a071d19f6b626a6915042'),
-      (149, 3, 9, 21, 45, '69b86ecc24abda6ed93009b7584959c69ad0ba748cb6d60b2ce8c38d0b3067f2'),
-      (149, 6, 9, 21, 45, '41b98855fc6a7aa341585318d7a628cacd698280d73454dbeffc6d3725f2778e'),
-      (150, 0, 9, 22, 46, '023b29cb1272dd8bdbd7ad0c94e810963eae76f52e226620ce0f2cb15ee2af96'),
-      (150, 3, 9, 22, 46, '0d480e526cf4eec01b5be1b3cade05b93b4c89ff1ecd3ad6987cc4ca677ab46c'),
-      (150, 6, 9, 22, 46, '9a3f284aa1f5f3ecd4a6e893f02bfbbb801b5501a209366e8471b8eb164e345a'),
-      (151, 0, 9, 23, 47, '4be12806c32f427297e2e77fce908a4ad6f70a227c7d240186f1e9d4952ca568'),
-      (151, 3, 9, 23, 47, '30021c114d8e2a17a0e43ea68e9c5618567c06850e0c681003c51765d7a58553'),
-      (151, 6, 9, 23, 47, 'a9a42387a24bccd094ba1ca3083b0761b1272bbe45308c0374de11273503c2be'),
-      (152, 0, 9, 24, 48, '99bef1c6008b8956dc283dc7cfaa83261db4fb0641a23392f0a20d52ea88df10'),
-      (152, 3, 9, 24, 48, 'c77c50ac59c65c375adf5d040f1005c91ab81f63effd8487f1ceb802f54ca1cb'),
-      (152, 6, 9, 24, 48, 'a529e8c51871daba2ebcd2ce3520bc431bd50a3bf562ae3ccc6a9113056e8d61'),
-      (153, 0, 9, 25, 49, '8c14193b071d97bf0278fc03cee2f1987c79fbe9c7299d494ea4485cfb7bdba8'),
-      (153, 3, 9, 25, 49, '6df9b269d8a230e653bd3b95db4a56518f40f3c6ab4f95d2312c5cd36765d0e8'),
-      (153, 6, 9, 25, 49, 'f20e43b0bad6857764ec93a6dd7b57802e65e3a5c0ff41e6d70fb0278dbb31a3'),
-      (154, 0, 9, 26, 50, '6708a3a3325f5ba022cfe29ba63521cbd7787503b3fbcaf25d9fdaa26796aae0'),
-      (154, 3, 9, 26, 50, 'e27e203c9a5c44f0989a4c5ef083cb10ac75ffc031d29e3fac6fd892abd0d554'),
-      (154, 6, 9, 26, 50, '1cbb739a11527c981c4848a1ee3c1463a1ad075832ab616bcdec59b285e878fd'),
-      (155, 0, 9, 27, 51, '9bde9940d9a90451932ced1657b2267374e7416a77847ab9ff4acb831853e31f'),
-      (155, 3, 9, 27, 51, 'd421af2b7966ab80f52a4d893495a105f47d20cb4aab4502034a14e3e2747d81'),
-      (155, 6, 9, 27, 51, 'b676ccdfc0ec34b1db5e5b6cfc32767c89fea57ab04d94e1835a9305ef28b47c'),
-      (156, 0, 9, 28, 52, '34f0bc3a0298e59304aa8015061eb79929ac4db607cb04cb4f94d9b40446f3e7'),
-      (156, 3, 9, 28, 52, '90b13ecfcdacdafeb2e769ccc6b01412d5fb5ed36766eee93f1bfddeb767a469'),
-      (156, 6, 9, 28, 52, 'b1c14d89cd9f624e6452a608252d13fb1530ed3248ea841b058f0c0338999b29'),
-      (157, 0, 9, 29, 53, '430aaf82302e710d865221d1d33a683b69844552269a4e4352bfddbe49e103f9'),
-      (157, 3, 9, 29, 53, '6c105b210ed581820ab741a5b45b732978dcd048520a0ee646563a6da23f6f6b'),
-      (157, 6, 9, 29, 53, '7fb5d730339ac3a700913d2aa5a58004f97cdd278e24b9fcdb1fc0972e3df639'),
-      (158, 0, 9, 30, 54, '04a33a142bf870e3326a07077655019c2e7c6bec2e3a6a245ce533e1e7044057'),
-      (158, 3, 9, 30, 54, '1de5c714e22f228e9a2338d732823af9ea25899407702f86f5f1ebe35859eae3'),
-      (158, 6, 9, 30, 54, '5b3ef24ad8c99b18bc64313066b26ea16968ca50b564eb8f0056e9244481cafc'),
-      (159, 0, 9, 31, 55, '87c1d22fac0d7eca27cc21e25f3e6c1af5998b8bfb5f2b876dca34cec08f361e'),
-      (159, 3, 9, 31, 55, 'ce3d4dfc97428b1fb9eae7597c0b646fa8223d9fe65f3cd845fc62a4d8132a23'),
-      (159, 6, 9, 31, 55, 'b5602d51f0a3e00b9577a42520f7662c790d86a5307260e37608793cca78fd05'),
-      (160, 0, 9, 32, 16, 'e0a35bc714cd764998c5547014941b146c21408f571da1202f2350fa1c2dd761'),
-      (160, 3, 9, 32, 16, 'b3f5e1ad3af1f073a184445246e248f8a939466e07b957c9c274d49c5547d966'),
-      (160, 6, 9, 32, 16, '7b24fea10e7e3aa739032673de0586e9473dee52f502288c006dc81336f06888'),
-      (161, 0, 9, 33, 17, '5a777ccee7ca0eaf9c9ac97bda5bd9a9f0e528f45e198e6e4341faec69812fc3'),
-      (161, 3, 9, 33, 17, '04dccfb296569aae6a7026a9a71fd2fd97f1504d19152ae8641d4c51ce8b1be7'),
-      (161, 6, 9, 33, 17, '6972a403cc230425a389105b37c86afe6e0d1ae450974fccbf6f1dc5d69cc5f1'),
-      (162, 0, 9, 34, 18, 'ef63944ea095a0106de03b307b6f8a35bf7b1d92894b74ca8589445a9fed2ca2'),
-      (162, 3, 9, 34, 18, 'd22df0be0d4e0031f055b487b90a55381d46e91771ef88e4c0ff907104d7cfcf'),
-      (162, 6, 9, 34, 18, '883c1be846e76e42b40cd1dcd0c67da8fc08b88b67f7dd13723e608d27a85942'),
-      (163, 0, 9, 35, 19, '4ebefba9b3682d9507014ef62122c6e4a65b7394ced5e5141b7c08c5867a2b7c'),
-      (163, 3, 9, 35, 19, 'e2e1bbd3112e48f87f51ba696672891a5b33f6aad625899824e6329000e90474'),
-      (163, 6, 9, 35, 19, '6db346e7c6bd5d7bd3fa607ed0e1bd4e55eee0016382a7f166edbe2b0c388836'),
-      (164, 0, 9, 36, 20, '791b9509a47bf690b323c6b994818254c513f223a6eebac61204fba4dc1ef99d'),
-      (164, 3, 9, 36, 20, 'b81f1a7eb40656dbc7f5fd98422e58ad287844da99d28ed7ac268bf446c72481'),
-      (164, 6, 9, 36, 20, '69c7cf5dda6408124ad93ea4ab62065e1a4e56b839f7d4599beffcaa7796af04'),
-      (165, 0, 9, 37, 21, 'aed4c8d5d8dda50697b48ca4d60b1a4fedb9b36543d79bdd14605fcf67622b5e'),
-      (165, 3, 9, 37, 21, '5de11c2623840d63e0da14176349ec58951d148dd41ae33ce227ba2d63876ba9'),
-      (165, 6, 9, 37, 21, '41985a2a8b1c739da387274481d07e1b6f2e9bdfbae18cb2a3286263b6811f34'),
-      (166, 0, 9, 38, 22, '3c750cc0af217c543b90cee4e4f5ee97b4a483f50be59c21679a131a1e1c8de6'),
-      (166, 3, 9, 38, 22, '74b7add77748ce6e46e78ff873d83b53c51b60853bec96bdcf7946a1c80e2ce2'),
-      (166, 6, 9, 38, 22, '687f60830079bc7f6e640a1fe29d101942d7db1e9a52cec68a0ac40c53b89f8d'),
-      (167, 0, 9, 39, 23, '19153ce751821b62c8a35ca56bcd8bf49c993bde45218ca4ff14b1cb9de81b23'),
-      (167, 3, 9, 39, 23, 'd7919b318a30200d205d44b09f2447520bdd56210eb545bcd8bd53cf20d08d3d'),
-      (167, 6, 9, 39, 23, '2bebc852a265e0667cb9a95891ac4b0729702883f91abf9aaf166141a6eae0e5'),
-      (168, 0, 9, 40, 24, '522540d1918e63655ddc7c31c0b50e2deae3a2a0f0bad46caa9cf7c4dd9bb401'),
-      (168, 3, 9, 40, 24, '8fc6ebffcd2a8471dcc8b6da71e86facd7b6bd5a23d3a94a84fd89a0d58ae831'),
-      (168, 6, 9, 40, 24, 'e6b7103c3b9faea4bc0668b8e55a7a0034657d1ebd3a03b32207809951f9919b'),
-      (169, 0, 9, 41, 25, 'a8ac162a314b1fd01d0ab17eadd28a754453fa75242c5e465d744796b80160f1'),
-      (169, 3, 9, 41, 25, '6ccc1d5cba939ec970b681e52be3ec84cd2eef3069dcb4d8e72a482394fb983e'),
-      (169, 6, 9, 41, 25, '07765646b12e946d819353baaa561d12d69cd7f6823d805c4ed5eab2f5adc164'),
-      (170, 0, 9, 42, 26, 'd040bf1de52d1cb6f6d1f8a29cafedebc406fc95b445ac531c3b974de0a88788'),
-      (170, 3, 9, 42, 26, 'add81168dd14ad71dd31c37ea77fa533923f0b7f8a5a9b6e9a4e61fb265c2645'),
-      (170, 6, 9, 42, 26, 'dc7f792b624570e247166c83fb47d79e1fec11062df267ec5c71789e938eedc8'),
-      (171, 0, 9, 43, 27, 'e2418355c1de8fdb648543164090ca69657a47181ec0db4a8bef69e894194a98'),
-      (171, 3, 9, 43, 27, '75a27622efd5edf20f1229e7cbe4584549e65ec16bb5d0da0863c5826870ea96'),
-      (171, 6, 9, 43, 27, 'e8a76663393d598440903ec937be71f090c5a11fa3e14ef30f6e48d121e765ca'),
-      (172, 0, 9, 44, 28, 'cff4bf516f9ad7b66a09551f5d0f34e6831e385b9f17ee7f48ee9c055dcd9e5d'),
-      (172, 3, 9, 44, 28, '628d86d609e7701ea9ab945b62ee9bc58ac1d800ba2532f143d92f4ca4b0e9ff'),
-      (172, 6, 9, 44, 28, 'b33bd1ed4596bc9c33c107a5b3c531aa2403de0e3e2c3a4caafc90eff10707c3'),
-      (173, 0, 9, 45, 29, '5605688f135e182aad3ba733521b5d6c6ba27193be83a3a42284b4266d63b704'),
-      (173, 3, 9, 45, 29, 'e3d709d932c6aac677bef17cbf0367c0f77fdd44072d5c4d91601301e4846e47'),
-      (173, 6, 9, 45, 29, 'f6f348d9418867696e85e11035d02470eb54570d55765fc1f3f109a026740567'),
-      (174, 0, 9, 46, 30, '08bd66738d33dba5721ed09f0f75233bd8aa9b77c2d09539cc5ca49075d855c1'),
-      (174, 3, 9, 46, 30, '965a33c5b55db31247859252a0f5be5a676e987c9a7ecddc556a809e3c6f205f'),
-      (174, 6, 9, 46, 30, '58c9bc88f0050bd085ed5b1e2ee3b891816a3735ae3a56365f07b079f77d2d83'),
-      (175, 0, 9, 47, 31, '5ebb0e0ad2d731542a75389e04758f8e5eea5d6485d3e84c835bb5d961118c66'),
-      (175, 3, 9, 47, 31, '50d3c55775ec794da63a89ffd6487371d1275827540323e97a4bf5a5d8cce133'),
-      (175, 6, 9, 47, 31, 'a302f423964e198a9cbf25dcc5bddb4df3aaf13fc586efb2d333fa26bcebbf36'),
-      (176, 0, 9, 48, 32, '66b0078eecbd6b5e7fc8668228fd0cffa9523ad0c8046719375113e859a60795'),
-      (176, 3, 9, 48, 32, 'b855c1c97f01a835d1c864e1fd5c72e5ccaa4ca9c55ed46c00bd3c44b1f1264f'),
-      (176, 6, 9, 48, 32, 'ca72c7bc78d2dd2eaa73cbab85d742e245c25ed73d80c4e5c7a2d7d2cb89287b'),
-      (177, 0, 9, 49, 33, 'ac32082281603e511ab07a0458d5aa7d7a2f770560e9136647e40df6a140852b'),
-      (177, 3, 9, 49, 33, '959d0ac47b91e2b3d12fb0649849ea87e139c882922664c616b9ae0b45072ffc'),
-      (177, 6, 9, 49, 33, '4c8745f598ae6e2af551c49ddc9c5799f762d505a2b7527303b309150ece87a5'),
-      (178, 0, 9, 50, 34, '17e9fa05bc58beee4e5ad48ec9587587c47fe8bd9e7807897454e6bcb555f460'),
-      (178, 3, 9, 50, 34, '267ecc087aa1e9063387f712507ea38c0e2b6979487cda1549cbe6807d4dc5ac'),
-      (178, 6, 9, 50, 34, '43353835be308681d221cf36fab8ab621ebf2ac16ba6d2d163aaaf80320b5dd7'),
-      (179, 0, 9, 51, 35, '307b0e38049a2ec51137149e77704847bdc01e81d1753fc72b6a160994d3b371'),
-      (179, 3, 9, 51, 35, 'f133f12f0f73e0b76d931e6e784d43570d4ec767841cb6c4ed810423a29d1484'),
-      (179, 6, 9, 51, 35, 'a89fb4c595ab26c63245d449bda0eb0ac77d79ae3bd91214ac29c7dc59905716'),
-      (180, 0, 9, 52, 36, '3ecdaafc7b11602f51bb4de491141d5430ac621e41b3a00ddbb4cbafa0da9808'),
-      (180, 3, 9, 52, 36, '40a10e2ba6c3eed83aae12780ecab12ddf7f3aa41186cc8a59b61809cb8290b6'),
-      (180, 6, 9, 52, 36, '2f1da7dfa5975422c8b35170215b50a7e683f60bb1370aa12d172daf6486b559'),
-      (181, 0, 9, 53, 37, 'dcb9052f06506f5c398d6b49385d225956e94df4913338a3422cf05556618d25'),
-      (181, 3, 9, 53, 37, '9a7fe91317f93000af10f020ae3bc033374af4ba2eb0e514c08bd2cc4512cb6f'),
-      (181, 6, 9, 53, 37, 'f751d8b65852b28bf2075de2c4c48f2f459ac28345e09d88e908a2b9230cdd35'),
-      (182, 0, 9, 54, 38, 'ad94272f6eb009d19d66b0cc7e6cefcc2e2c2724b14b4a516c843d4117f5c43d'),
-      (182, 3, 9, 54, 38, '5a3950e5b083d35231657f506cf47fe51d18e4990d95f5808346b83cf07423c3'),
-      (182, 6, 9, 54, 38, '32e88872f4a11cd8378db957e76a372f9a0d40fd88f29ea05312e00acb9e8ad0'),
-      (183, 0, 9, 55, 39, 'f2a5f3ee2763ecdd2814bc00b08d032020b5515c37bce3139b98fcc101e82a9d'),
-      (183, 3, 9, 55, 39, 'd38d4178f28e0eb05df863bacb1a2e9d6242b02a19c747a0768db83eedb88613'),
-      (183, 6, 9, 55, 39, '20a696b6a22e16d861d00f3d1331677a2591eb00fa287ac02c6f0c11d93a60e2'),
-      (184, 0, 9, 56, 40, '8c8aced0b731647c9400bb35bf02cdf81420bbabdfbb31495fbe6f6ebfda79b5'),
-      (184, 3, 9, 56, 40, 'db658a773351228926445ef11f9a6a595a2730409ab618b8c4d6b93e5e9b9cbf'),
-      (184, 6, 9, 56, 40, '4ddf345dd6721c5ca1d1e055f3b619e44059152e3fc15febc3b3336bfe44b47a'),
-      (185, 0, 9, 57, 41, 'f71ec99c8bfaccee75c8993f4935d66d8aa3fda12fd622609483e986ef4b1c54'),
-      (185, 3, 9, 57, 41, 'dc8b8ff63f3b281a39bd6b58cd34b2df1f821a3f511b30f2463b98a2b8295617'),
-      (185, 6, 9, 57, 41, 'c2b777ef570f0392284d044e0ba6ff5c63a4e62319ed115e7664bc09957f9b75'),
-      (186, 0, 9, 58, 42, '6a4f990596843148edde8cd776f36d83bb7b0daa66eeb64d2ddff07db968138a'),
-      (186, 3, 9, 58, 42, '95c087e32829c648e7f0b2c82f6f6f265851bb48503ca7d3ff30a69a8ed72f4c'),
-      (186, 6, 9, 58, 42, '88a5ad0abcea2dc2418ffd5fadc5f4182c5909d9a0b95aa10e0da4db8439a2db'),
-      (187, 0, 9, 59, 43, '33af2c4dbfb0dffa8a3cacfba0259a1a78299faf6420a85bea7cf632b2660d59'),
-      (187, 3, 9, 59, 43, '82c5b98e7a840bd25419f27d4bf90b2009f70a5ba041e4f3b17be4f24846bd83'),
-      (187, 6, 9, 59, 43, 'eeaeccab963a418f5bb45de305aadd2d526c7baae8fcc3e2891010366ca2883b'),
-      (188, 0, 9, 60, 44, 'bc8611c98ab49006cd9a23e6dd5b2749d17fbca39b9b477a7828dedf8d8ecf8b'),
-      (188, 3, 9, 60, 44, 'd8765be2559b9b2af8c2ed006115725bbcd7ed35a82edb2ac0b72cae0a3d78d5'),
-      (188, 6, 9, 60, 44, '4c9c819d9b2be6c0434fd75c6ab6a18c8cbd34d588a890612f71ff9702520cb7'),
-      (189, 0, 9, 61, 45, '61054aabd9255b0b9e27e4b83e1d5840a7b87808595d464018f979c84402c44a'),
-      (189, 3, 9, 61, 45, '471d43e52600250f00715113d1b97e3c307bdd32782367fc1e8026f006864abe'),
-      (189, 6, 9, 61, 45, '2ece890f7de260b754c106b54b6e87cc634cd9c37da24858cf6941db4b429f0e'),
-      (190, 0, 9, 62, 46, 'c7519e480a7d27602bc8a47be1e744a41996da7761219de3beb3694b082fec52'),
-      (190, 3, 9, 62, 46, '373accb0427566340a08ca19b06faca4e91faf96c63e77391011cf01785960e5'),
-      (190, 6, 9, 62, 46, 'd95c0525c28036be6cc19be05066fdaff6f795026922cd6c8764b4add7cae725'),
-      (191, 0, 9, 63, 47, 'd4e8200a4db7d40dcf0c1eebf8c152fa51f4099a2e052d820abf1fc3268b5e99'),
-      (191, 3, 9, 63, 47, '21727486ddaa5e3bcdeaada0c9a7810ca53a8d0cfef494890deb8936cb39a98b'),
-      (191, 6, 9, 63, 47, '0b4ae64c9a88e203ae28672c71256ce071afbddfea54de8a04b7958f5e5a64fd'),
-      (192, 0, 9, 16, 48, 'b21da1aca2129bed84b0ec8a134a3dba9ba8b9589b6cb544ae3d9d4a0389ec4d'),
-      (192, 3, 9, 16, 48, '077687d07b4dc4c8e8db116614ec65e45f5b804e9d8b8c2125f43a6d84cd7578'),
-      (192, 6, 9, 16, 48, 'd5ec8cd2d9a9ca4f817ce2575a5c5ceddb108f8f4deca17448cbe35f3b7bdd6e'),
-      (193, 0, 9, 17, 49, '37a6611d3c442b9db098a22007489cecc37ebe7baa3ca8b9406fff07641203c4'),
-      (193, 3, 9, 17, 49, 'dc1a953491ceffc5bfeba4b250cf335e61f9e5acf7ccec9c698602c495d1502d'),
-      (193, 6, 9, 17, 49, '122fca39f532622a85d8be67ce04a1541935961016ea4dc0b1fe62842461075e'),
-      (194, 0, 9, 18, 50, 'd595933d355772bcbc76c45b679e15331b1f5ed90a9eeb82b92990ad32755048'),
-      (194, 3, 9, 18, 50, '24963d4262d76b41496246efb25c5a7c4b7b2b13977e6b21ed03a457810276a5'),
-      (194, 6, 9, 18, 50, '4571302b6bd8b71e6c95a9ed6ab6c10e82eba9b88d25da6eca71c25da893860d'),
-      (195, 0, 9, 19, 51, '4e636533f79064df91abb12229aef36d9185d62136b6c7a07d0dd31b397a41ca'),
-      (195, 3, 9, 19, 51, '009c6aa586bb3cec1f6f87a60d210883030a6dd8d657d97a3fb3df655de80057'),
-      (195, 6, 9, 19, 51, '33dccc836838f6172592eda9ac151de28822e4ab8219ce25a45da295e19a79fa'),
-      (196, 0, 9, 20, 52, '621408443c9bbb93e7b4eb2fa059639a780def34fbcb888ad5365270beae7c64'),
-      (196, 3, 9, 20, 52, 'b30cb805c1b361b6c11cec409be889fb5fab543cf9c1f5089cf3b30defbc7d7d'),
-      (196, 6, 9, 20, 52, 'f7eefc6d1c9314697a88302c6c34cb3cae948b31aef54711a83b2e341e919408'),
-      (197, 0, 9, 21, 53, '61d895a98916d5ce627142b88f59e75e70cfac8c55f56553d51978c7460514eb'),
-      (197, 3, 9, 21, 53, '8c2548342b033bfc92cec5920c0f056d5cb3eb760d9c9593176c3ea65ed3de7d'),
-      (197, 6, 9, 21, 53, '5137168b2ba622130779c3e43bc9fe796048563720fcbb73ab84c18d3b5681b0'),
-      (198, 0, 9, 22, 54, '3071e8f3433f85d501a9ae93ec0658b3243fea03a46b1f34b311be6d5342da11'),
-      (198, 3, 9, 22, 54, '5083fe8d9f33bc77ecc094fdfa9ac43e074d0aa15fc49aa788e73c7076c393bd'),
-      (198, 6, 9, 22, 54, '6701de08fefdda487bb3ee82d3583acdbfc6cb74614af879e3edaeb3f093de7d'),
-      (199, 0, 9, 23, 55, '0d8c9ed72e345c80a138e07972bd9184f6745926fbd6c0406145866ce1f3d034'),
-      (199, 3, 9, 23, 55, 'cdd7f8ec2475bec5d54931c7f3ec6419ab67cd27f6a0bcf4e1b0c2e1b380cf43'),
-      (199, 6, 9, 23, 55, 'af522f6271683b4a82bee1f522b1f66c93f5a54a99b0e4561a4bd9f89a76f8ff'),
-      (200, 0, 9, 24, 16, 'dd2ae60374932ea8924ec2f0bb4f05938d58b859f9e7994dfdd99a2cb89818c6'),
-      (200, 3, 9, 24, 16, '5f0d21451e73767d53b53db833b0d773ce5b9ad1d12320127e2b3f716ab7e80d'),
-      (200, 6, 9, 24, 16, '7f376e63689b213474d3e5bbddbeb23fef096086fe16eda441bea0d418425d72'),
-      (201, 0, 9, 25, 17, 'e621cc59a48049d835c0d191dd79706998ba7d0330cedf79c9f05ea6c664c663'),
-      (201, 3, 9, 25, 17, 'a12b00dade1534de3af7ac679b8534956443226ac267bba4a5466dda3a72ca22'),
-      (201, 6, 9, 25, 17, 'd95191683df1eea8e2a5773e04ae0a0fe5dc360c4bad52699d348e24d415de65'),
-      (202, 0, 9, 26, 18, '16c4c65dfc1982edbbb9dd4e22db3e5418dc979c396d266f70547cf6433fd4ab'),
-      (202, 3, 9, 26, 18, '61ba96cc68733ba7916c68dbe61df1e4acd3c0682e4609dbb25dd9c30e60ecee'),
-      (202, 6, 9, 26, 18, '14fb5b6f8d3a07d3297dd5d5e785a1bcf8ebfb34c3abb4cbec7c02811a9b3d58'),
-      (203, 0, 9, 27, 19, '8a6a6fce27594cadf91a619bfe15861f272f58b3660094efd585d11871f5ff5d'),
-      (203, 3, 9, 27, 19, '4fa2294d4e9a23b6d773131bea5ef3856c32281f9aef5d0d93bb1afb2f1956fa'),
-      (203, 6, 9, 27, 19, '062299a64181a10f419fa1954dc7a17fc71e5473e6f289753cf9a70abda0263e'),
-      (204, 0, 9, 28, 20, '626169b423c576383e13f62339e2918cec0751bc3cb79cc2cd744c871547664d'),
-      (204, 3, 9, 28, 20, '341db0a065d9509df83ee13b211d94b99f2377cef0403b0a6d472f5a9b3accaf'),
-      (204, 6, 9, 28, 20, '9efdb30496a04f8a86bf9b4583fd4a7463917614bfa3bd2e84c0ac1b277d63ee'),
-      (205, 0, 9, 29, 21, '0fdae589dcea0cd7fcbd5689729b92d9a1313c447c0425d0bc99d44ed412c47f'),
-      (205, 3, 9, 29, 21, '1185fc2df63ff37db9f26f69c68e1b72480cb864ec6ce94d26d9242c433f701e'),
-      (205, 6, 9, 29, 21, '6e4e61995703db009498044f81c460e1c3b107f76f06988408da351363c949ea'),
-      (206, 0, 9, 30, 22, 'ee3f02a6f9c59309388ebfee97e6282976b09596e64d84d132f1106c5ec09c35'),
-      (206, 3, 9, 30, 22, '0451a510b7d38bb2321818fb784bf6992fd5396063fdf85e427a456e240b10c0'),
-      (206, 6, 9, 30, 22, '1a69085b9f9ce3d5da5afc2dfc6ca966c53178b933d813d871b0e2f52ca75429'),
-      (207, 0, 9, 31, 23, 'e80d78aea5531da0c019ec4df0623eca63ab967775920c6d74c6957bb022d665'),
-      (207, 3, 9, 31, 23, '8e5a21a86c737bc8611cd693b704dc1fe0c59ee09dd97f3a663e9b0dd25de3b2'),
-      (207, 6, 9, 31, 23, '9a20c3ed5964c21c954c216d4b0a5a0a93da6dd69a2b2b54116c7fbdcedf5f70'),
-      (208, 0, 9, 32, 24, '4b80a9c0ceee833912b21d4521cc39f87e8144c96820a8fb3e4292aaef493d4f'),
-      (208, 3, 9, 32, 24, '3f06046ea8814b41b78146604572b3d2922adf2e593e640b2b97de57731d8e9a'),
-      (208, 6, 9, 32, 24, 'de2a7585d90de23253bfe5d05487195414fbc983745ce6e17da79437d6747860'),
-      (209, 0, 9, 33, 25, '3c5d031fd21f877123a6df8b6376833ca121582b92fd72e87a9481e022cbad12'),
-      (209, 3, 9, 33, 25, 'e85f4c93d087c209071932847fe835cd9e241776bba1dfb5a3bb7d67512ea4b7'),
-      (209, 6, 9, 33, 25, '4edca250ffe50c29d42f3a7e6dfb9df07d6a7a094ccec7017c8b05ce7cfd13b4'),
-      (210, 0, 9, 34, 26, '85124242095bb59169c700737247fb8171c8bfe27eb164b887fc3e92ab394c37'),
-      (210, 3, 9, 34, 26, '7acf5f8c6c04f4b7c1b301b59ffa48859a7e12487c2e33d3dc27b0756aabff66'),
-      (210, 6, 9, 34, 26, 'ecd9fd9824f63e056dfcfd1883ce823f87780bf5999dbe0720a2b918798e7fd1'),
-      (211, 0, 9, 35, 27, '552a613adad24ac973cd2504dd66cf7e9f0b26ae70eefdf865ba1175a12c6c8d'),
-      (211, 3, 9, 35, 27, 'c59a6f883797b584f37f3519d8cd7691dccca9eb0fe9e0ec9d2624315d9d66f6'),
-      (211, 6, 9, 35, 27, 'c7d28745c8e903ffb36c31ad3f2bbb88e147e4ddc8837df1f255df9d715c1d0c'),
-      (212, 0, 9, 36, 28, '5462828950e74d275bc9671ea8f7ed024468b7f498482a89afb2fae804fa3f99'),
-      (212, 3, 9, 36, 28, '19688b23ccdd250bc3f0d37d816d1f1891bd56b4b2a9c34d75810f664ae5fa66'),
-      (212, 6, 9, 36, 28, 'cca658cdb04b87855ee09857cc4169fd42e2ee6d902df4785873a4224d21cc7e'),
-      (213, 0, 9, 37, 29, '1e14408c7aa9c74a31801aea7c756a628c0a9f1a2bc545acbd952b10b6649692'),
-      (213, 3, 9, 37, 29, '1efebe8ef8ecee8c99cb7fc61d961fdbadbdebd33872d4083cb9f855bee64425'),
-      (213, 6, 9, 37, 29, '52197e8ae9ea8770a8008348266bd331b3d71bc7aadac8984d424a20a2da61d3'),
-      (214, 0, 9, 38, 30, '0f68c88ba384c722e4e442e7dcf600efbf669439ea5dcd93e62f3965b427f77d'),
-      (214, 3, 9, 38, 30, 'ca8069856120fd53ab93928060b945524e6a2a5380b511ceefa897a6f33ba162'),
-      (214, 6, 9, 38, 30, '798b9e87acacb59ea8fac99da9e3101e97ed9ffffb058a9ce8102c69765fd374'),
-      (215, 0, 9, 39, 31, 'e220d17fa2eab6206d38d02af5f2667b4d8a2560cc8ce973f18b2c8b3fc6595d'),
-      (215, 3, 9, 39, 31, 'aca121d8d3d360d0df00fe6f566766272cf00dbf3cd397e94dc58f58901ae0c0'),
-      (215, 6, 9, 39, 31, '5bd7551316acc9aeaf8ff2936cebfdf55f9c1c3ea1723a069a545d55449296eb'),
-      (216, 0, 9, 40, 32, '58b3806c7133d5626ebb9fbc6797002adcf7dcd4cea3d8fefc2ff8e70aaf9a46'),
-      (216, 3, 9, 40, 32, '43de8ca267748e64fd88511ae0239677af6408a42da245f710c7722cf2d51137'),
-      (216, 6, 9, 40, 32, '8b9b84420cc21af1a29c8efe4c70618b27dacdbec017931ff9b2c74990d1c6a1'),
-      (217, 0, 9, 41, 33, 'f41b5fda2e38e769808004fb7d35cd79dd0e904b5f9daad84afbed617ed25592'),
-      (217, 3, 9, 41, 33, '912be506f5c47b99a2275d04ac7c2702b9cc13db0acf1bb4a992312ac405160d'),
-      (217, 6, 9, 41, 33, '591e676784fc3f45e00600f7214c82da9d815bd10bc276aeb4b1785ec8b175d2'),
-      (218, 0, 9, 42, 34, '94e722b59f5a59f159d1a9f9f13be9ce8e4d2aa88ab01363443f8b197baae1ca'),
-      (218, 3, 9, 42, 34, 'ada5104fe470f805dd4cbd274fe14c4125c4417f1608e530fd792d6efb93a5b3'),
-      (218, 6, 9, 42, 34, '2d15ef93d716360a174860693ffc1c571687e21ff224013eeeabbe43929e970a'),
-      (219, 0, 9, 43, 35, '7df74d6bf2913999b1b2a62f7cbab368648921dd9fee750c3a2ff281f88a737d'),
-      (219, 3, 9, 43, 35, 'c360dcabcf27c605aef06a2bf72cab243d8b34ff49b7642f5435d688a714bd54'),
-      (219, 6, 9, 43, 35, 'caac45c6a0f38b8e9feee5c46746b6fb6be11ec38a812526d4e20476c2601e70'),
-      (220, 0, 9, 44, 36, 'cf6da6dadd9610dd8191a042525f891d2b9599412910be27718770d7d158d675'),
-      (220, 3, 9, 44, 36, '770dd214e58abc2dfdcd419d8435553503e32c955073500fccc45b3d7d40568e'),
-      (220, 6, 9, 44, 36, '2ffa3d8a07bc6bbb3a69c7ceb53074f369ff092592eacfe81b08b14ae2de874e'),
-      (221, 0, 9, 45, 37, '384cb527946795d42cccaadae3dbd3cd8525962230245d946272ba2340a03a06'),
-      (221, 3, 9, 45, 37, '2774c5c3cf070bbe6239704b3c90773ffae86479398cd27544a8181f447b9e1b'),
-      (221, 6, 9, 45, 37, '95d997b3351558cc193d18c927bc6a467ea7d2832c86acceb3809218a99a0609'),
-      (222, 0, 9, 46, 38, '9c7dec88e7f5c4746280fa1a1a379bc125fb7cea3092027573c225ecf9c7a9b1'),
-      (222, 3, 9, 46, 38, '047a30acea1a8db63208a04f57e7194fe1fe5170448f9dbff8e0e1405e1a6fe0'),
-      (222, 6, 9, 46, 38, '29750ce1ec51189d8bf521f696ee6d9668e02a1ad6f58f0fbcf3ef07f61654ed'),
-      (223, 0, 9, 47, 39, '3b15ef06ed77133748ddc5adc0839a9b0349387b04472f8581bbbdd5df64fde3'),
-      (223, 3, 9, 47, 39, 'f46b32c863e17513ed59e0a9bd46fae42b13866e1da1c819598e827f3ec952be'),
-      (223, 6, 9, 47, 39, 'ac41f4fd421de9fd7454c338f4cd607cc33a398986fa0edf1a860fd91183a85b'),
-      (224, 0, 9, 48, 40, 'c6b0f63595d4420ab74a0f57c107025e6c228277045146e681b26a6306f5a62c'),
-      (224, 3, 9, 48, 40, 'd8d6ceced767f38c51d71489967757a346097d7558fcbf1943bcae9bcf0ca4b8'),
-      (224, 6, 9, 48, 40, '8beb88385bd1ee0a0f2606304c3035661a63e2864c6528540b28176770ed5356'),
-      (225, 0, 9, 49, 41, '5c8dc49bbb8fc7b263c79a23e7ff725c0abaf138aff748792bd76403422bcd48'),
-      (225, 3, 9, 49, 41, '9026ea4a9f0c2b05420f936be07184478a03ef4fed39e6602727aac57a5beac7'),
-      (225, 6, 9, 49, 41, '372df08777358c6c863e0e543065d7c85b0e96683b4aa93f880c70da34e4ec1c'),
-      (226, 0, 9, 50, 42, '6b834f04cc5fbc0361c75261c63e00f81fae41275e1dc9c46f0394b25cf4c10b'),
-      (226, 3, 9, 50, 42, 'ad58328e596e6bb3546d48c917b0978ea99d2957f114bed9367c95bfe246ed81'),
-      (226, 6, 9, 50, 42, '115102301828fa7e25bbf2e92a56c308e22e2c41bcb674e65809ea9a832e0eeb'),
-      (227, 0, 9, 51, 43, '564bfbaa5c00876c064c0b31b9ccec1d8082c65cef2cfa20d1d8dee57cf1b205'),
-      (227, 3, 9, 51, 43, 'd7e1d342c60985e7edba445f4937280f5d5c5310c3db042ec644ce554b8a0d32'),
-      (227, 6, 9, 51, 43, '3e00a60e13311b6f403c79f04dc9294dff6c0652cb125bca5930eb95beffae95'),
-      (228, 0, 9, 52, 44, '9d6a3b67a87354064a75cb916b1ef04a5996f8ec0c69810f1c2ac42caa7d9db9'),
-      (228, 3, 9, 52, 44, '2751f0ce6f2261957cde6ffa18247ead464011b6c497bcd0e74a73b59ee13492'),
-      (228, 6, 9, 52, 44, '2616581d8eb9c724e8b9f8160e4d7b8179a452e0339d226aa43f34ae1c2b8760'),
-      (229, 0, 9, 53, 45, '6d5f73e86cf42990296d8afc083dc7b06dc6c34b36341410901c2479c61fb6ed'),
-      (229, 3, 9, 53, 45, 'a16842a2f0d3cc06771d0f80dc78da40b73d8b396ecc7d3f208999b5c99fdeba'),
-      (229, 6, 9, 53, 45, '27362542baa014308ec8d1b92e8a473cd68308933c39fab8edab587a5fe6df47'),
-      (230, 0, 9, 54, 46, '000649c18eb0dbbeb65bfc75859734937592c0cafa70ae93773487d4b41d0f6e'),
-      (230, 3, 9, 54, 46, '8fe265d76af9b9873fb18ac9c93d6bbe0983e1827b82d7fea782fce26ea59829'),
-      (230, 6, 9, 54, 46, '9c135f3270a390f0cb78ecebbb504cb1a4c11d9d3bdcc024280023ddb574cdcb'),
-      (231, 0, 9, 55, 47, '48bf9e055aa1838f2125b557fbcd8ae06f6beda7ef1ff1a57b3a74705ec87ffe'),
-      (231, 3, 9, 55, 47, '47a909d9cb69dff56e45cc72818149719881ff98a134a1e9d25d31e7afd83342'),
-      (231, 6, 9, 55, 47, '435092954e82cc9317dd02722d5d7b6602bd7848fd72364099a845b8fcf9d7cf'),
-      (232, 0, 9, 56, 48, '9ca7678e5dd78e555c1da2b3e42f3933e7650a412f378e47a84560c5ddeb5183'),
-      (232, 3, 9, 56, 48, '2d840dbe32d6b6c4a088ef8fb9dbc01907dfc34368383a3f9a6100474fb1e744'),
-      (232, 6, 9, 56, 48, '2499a30ae6d7d85f01d6793e11f5eadbd28058d2104a2e40b4231034863db45d'),
-      (233, 0, 9, 57, 49, '4afa6e943bf8b5a3f8ea5622000cc4f6c41564bf3a940dc0e5309fda0b44957b'),
-      (233, 3, 9, 57, 49, '2b9817fdd216efee5cda37cbc1ba197fba868725fb902ddd5dcd7ded7739bc7f'),
-      (233, 6, 9, 57, 49, 'dfe47642dd6160d7eed10498d5b1791be90947419e86a1e0f57552c575ce53ef'),
-      (234, 0, 9, 58, 50, 'bda264baa7126ad97cff34cfa2d6e1bdadc293c9b92113ee5d89378e2bc30533'),
-      (234, 3, 9, 58, 50, '3fb1a678a71eae2f46786a20bf4f991e15e295a458cee236806cd74bfb2b5969'),
-      (234, 6, 9, 58, 50, '590f8a222e555a8fdb8122992b06d4523c2fd7b13ef8320d02c2a7491b710081'),
-      (235, 0, 9, 59, 51, 'ff3849a090d5c46f90603f23295a43184e0d3fa5e57c397a4e2f79cf965c10ed'),
-      (235, 3, 9, 59, 51, '408b8337a05b27c80a7669636a55be5f03be46ab37d3afaf96f9e1e6f1be2799'),
-      (235, 6, 9, 59, 51, '5257144d7e3c51927b4d4294842d2464cc84fd3add87eeca3fa4433ad3aea65a'),
-      (236, 0, 9, 60, 52, 'dd06e20d2943d3e3b6d66f610f3920dad9f3c991bcab3378f9b831b5130a9b88'),
-      (236, 3, 9, 60, 52, '7b40287fdfeede9c714617830b9669a367b1d1dc4aaedcdd9b093d6f0485ddfd'),
-      (236, 6, 9, 60, 52, '99272dd3f81970d37bcf513798b185e8814bf7aaa85d424e141763c0d56b9308'),
-      (237, 0, 9, 61, 53, '5391a84161c686442b855de69fbfad4e3fa6d73c35c7ef6643d341326bb2fab7'),
-      (237, 3, 9, 61, 53, 'cc7b054b32594152e84678c3888af62977e5069b371fa32e70a744f268cbbb0a'),
-      (237, 6, 9, 61, 53, 'f841c03bf5f4bde1a1ea1eb8590296cc0f351d50429a9b53ece3846f572d4028'),
-      (238, 0, 9, 62, 54, '6b9daf4919308f779c4bc609711d2c16497ef3df03e097a07bcc76e66cf79710'),
-      (238, 3, 9, 62, 54, '3ecd6be68fcf2c8dc46c2f37816e9dccde8e3bcf02b0ad33b09087dc965ce5c8'),
-      (238, 6, 9, 62, 54, '5fa37f9dd8420d484b6ffab0b92a44d2dd09a5c31777825a81a3aa7c0bc75567'),
-      (239, 0, 9, 63, 55, 'f90316a1360afe18f1f9eb35a8da6e8009f734170088514d9e526c20e2ba1ea4'),
-      (239, 3, 9, 63, 55, '61e51e3e80f16da1e5c724137aa52a7b983c721dd1d9f4fb502aadf956b1d338'),
-      (239, 6, 9, 63, 55, '54dd1a09088fa043c42f23d8a71af4b984e6e3f6c73a1250a36c52113303096f'),
-      (240, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (240, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (240, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (241, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (241, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (241, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (242, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (242, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (242, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (243, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (243, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (243, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (244, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (244, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (244, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (245, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (245, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (245, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (246, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (246, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (246, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (247, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (247, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (247, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (248, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (248, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (248, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (249, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (249, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (249, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (250, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (250, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (250, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (251, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (251, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (251, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (252, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (252, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (252, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (253, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (253, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (253, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (254, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (254, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (254, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (255, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (255, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (255, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (256, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (256, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (256, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (257, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (257, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (257, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (258, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (258, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (258, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (259, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (259, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (259, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-      (260, 0, 9, 36, 36, '8e2267d9d5b3887b3155ac1c3ea2f23f34ef2072b48e7ea2a0e2d826699767e1'),
-      (260, 3, 9, 36, 36, '432f1b390e55ce9e52fde23ef3fac4deb7394d7746e84bb34b7a7fb14b40ae80'),
-      (260, 6, 9, 36, 36, '39b419cf935494540e712c2622589962f429f793305e8f1e9b6cc92a28b89701'),
-      (261, 0, 9, 37, 37, 'bef64838d49ccada5c0b459946c321cd91b0d897895270bab0e69bfe0a1c4186'),
-      (261, 3, 9, 37, 37, '241c1b8b05fbfa04d04ca702ef9491ba58d0f3b4dff52734abe5ef94cd9b9636'),
-      (261, 6, 9, 37, 37, '09fba7228703b4160dd29da3ce6a4715ff93a9c0003b670d550cb73baf034701'),
-      (262, 0, 9, 38, 38, '932db3e008ec4488ce17287f81170a7862796c650dc271cae7b0f70261dfa27d'),
-      (262, 3, 9, 38, 38, '33740f21df6eac2624d9e188ca5356ef20cee44befb496fbbb2ff0a3fe28e0aa'),
-      (262, 6, 9, 38, 38, 'cf86939424e249d6d07439c7fb5c996d689ae057b644d93c8b51dc59058774ff'),
-      (263, 0, 9, 39, 39, 'c2ce2172256dcee2e4c13d86684c37b9d633ea43599b80ee81d4a6019ffd5e80'),
-      (263, 3, 9, 39, 39, 'cba1c95fc94d5f06eb313e51bcdc6b9ab1548bf551d41b2480332795de8d2adb'),
-      (263, 6, 9, 39, 39, '7985683d280f5b4a6bb910f562537a093498bc76a447c0370dabcc5d8e3dfa3c'),
-      (264, 0, 9, 40, 40, 'ff657e41afc635ff08e0a4abab525368043258df941e1d2ed25b482b096e7824'),
-      (264, 3, 9, 40, 40, '761c108367f657b8089192b9a22176fd36d287c590d6a8b437880243809e0d90'),
-      (264, 6, 9, 40, 40, '7bd196b5358ead0a4538348c04a26344c35fadc8c083a6f86ac6d6c0a4ab8c3e'),
-      (265, 0, 9, 41, 41, 'a24bb88ed1a55a5eb96dabaa64525de563901413639d240e6151c9eedbcf231e'),
-      (265, 3, 9, 41, 41, 'c588f878a531db49cf9ea0e87876003a55452529365538955d3ab42782be47b2'),
-      (265, 6, 9, 41, 41, '1a821f7233989043862206aa25bd30504a8dde18a20032e24493a657eb2ae036'),
-      (266, 0, 9, 42, 42, 'd02923e877543df074b5efdf26a5b8065101abd185d5916d59c6a67e54a7177b'),
-      (266, 3, 9, 42, 42, '84a50ba70c76060f329e1b22071ddecc8803f7ab083bd899c5c96218ab0c93f2'),
-      (266, 6, 9, 42, 42, '1a6b741e8e1846f896fee954e422b48c30639cb0c050e50337b8e646f457e8b3'),
-      (267, 0, 9, 43, 43, '2c701d56941329b13669a9d35fcf15aca518194cf8c9bf23be10ea1fac68da93'),
-      (267, 3, 9, 43, 43, 'd1dde2f7cb06e0b1eac1c0a0fd44edbf50ab53cf2bdd94e97aede3c0e7ae5ca2'),
-      (267, 6, 9, 43, 43, '194bb921b71faf4154cc3145afc1652ee1f5cbb5271b59bf36a44c18954bd51e'),
-      (268, 0, 9, 44, 44, '157387272447ffa6bd4dffe247f0a8ed6cced1afefbe294e9759207dfa928edd'),
-      (268, 3, 9, 44, 44, '6032306c5855632d26d21d5e523146db323d322d52ad96ad13b815529cd55906'),
-      (268, 6, 9, 44, 44, '1e58ef598b916f1092d2a576204324d9628736711610d4d8b28faa69a398565b'),
-      (269, 0, 9, 45, 45, '8ef00e70eec04188432ee3cdf06aaf5f8a70b67d746d723e779e37cf255e7e57'),
-      (269, 3, 9, 45, 45, '47beb753ca5d22996f2613d216851657dbd32346eb8b8ecfde77ba2a3e475305'),
-      (269, 6, 9, 45, 45, '03721557b78b5fa383d9c81488ab24b7d033bd1b53537ff6ae9de9a487ee23e0'),
-      (270, 0, 9, 46, 46, '1a503cf36668310c171d3b1908e16af2c79525648d470c3247d49286fa13c474'),
-      (270, 3, 9, 46, 46, 'bf86ce3aaba71a7d0e823339d11d52e5db6adfa69c00c5896eafe9a5cd73efdc'),
-      (270, 6, 9, 46, 46, 'a38f000d6474d7208c6a5c0ac176a4b9173c9b8759a42f748ad1dbaafc48ddf2'),
-      (271, 0, 9, 47, 47, 'e01c89ddf285a808cc59dd30341979021e680880c09128e56646893853f8c8a4'),
-      (271, 3, 9, 47, 47, '08f7f319765523f1f252f09c4922d7b5f4ab489430167fa3a1670511fa1c12f5'),
-      (271, 6, 9, 47, 47, 'acf788970d3826a2e336da1830c3cb3f47bb8bac47549f9b3117cf2fac70496b'),
-      (272, 0, 9, 48, 48, 'd93da555eaaa95d22d99ac77e1940624cfb87dccbd77c719d4068ff71c6a9782'),
-      (272, 3, 9, 48, 48, '957078a4fe289fe09f3fa9e029d1f3b8e0208bd91719f02efd9309b7d0cbc416'),
-      (272, 6, 9, 48, 48, '03384c23f91a22d72bd94aaf4248f2403f50ba91d87e947ed3666567f488b81e'),
-      (273, 0, 9, 49, 49, '539a2fccef6a006d4f517540d56793e9be1341e8dd53341ed41913342e849d1a'),
-      (273, 3, 9, 49, 49, 'a82f9b8d65fec085550f13f943c37066e8b72acd26315964a86c58bebe5a5857'),
-      (273, 6, 9, 49, 49, 'cb96c5e3e5b63b442382f3c877dc48348a7bec99a68335dffc065ca75007cfd7'),
-      (274, 0, 9, 50, 50, '34d6781cf6e48453714e57f44273cea8073587187cbfa582df2772fd4b05b0ab'),
-      (274, 3, 9, 50, 50, '463b64415db029d7e867b9737f8f9dd1dc652abe7c304ac64d5729246c476873'),
-      (274, 6, 9, 50, 50, '12a31686a0dfe8c4eb3e3c63c791513289192576981c081066ac8bdcbe711d37'),
-      (275, 0, 9, 51, 51, 'af5d49e6e42328128857a3cb3b064c14ffaf680b2ddc27243719988f6cf970e2'),
-      (275, 3, 9, 51, 51, 'e2dd68fb3381d341bee0fa68583b558387027067ef9f83bb8cbc6d0dcb01ff7a'),
-      (275, 6, 9, 51, 51, 'd1aa44c84feea301ddfcaaaca1f6b381870bf6b6fadef66b3eb6bb1eb3e8a540'),
-      (276, 0, 9, 52, 52, '1eb2e7bc51fd9dfb1ea02c1675f784efa7087855c1f791fd4bd92d99aa2f99a5'),
-      (276, 3, 9, 52, 52, '23026a91ce87e0f535091463b23cd61ce28ff13ebf0c0bbdfdf77cd30c2870d9'),
-      (276, 6, 9, 52, 52, '5a8d6e7eb10c094ec82bc6b1e7ccf4b35f0443a6c2cd39bbe79103869999505f'),
-      (277, 0, 9, 53, 53, 'a7db595a870b83d019aefa8bf1f01f20337b958339196e91e7c2c75ae51f65ec'),
-      (277, 3, 9, 53, 53, 'bc08b1743c518314df8c9fda918f9ea908fe9afb45910dcc51222a1ccffd6e66'),
-      (277, 6, 9, 53, 53, '1056d0defff8c1ad62c6444c15a6887fc7fd388c807a8e2b1870ad7542c68b09'),
-      (278, 0, 9, 54, 54, '2afa136a26802e24f52b6f99fc0d9636ffd4e07a2c360def977954cdfeaae085'),
-      (278, 3, 9, 54, 54, '24a1f9c8c571c1d034b5a5e0925ccefdcc0bf291b51da8179e8dbd55767b0750'),
-      (278, 6, 9, 54, 54, 'bd0a89ed8e89b12f8a6d0715b2680cd54f41bbe63af38f6974df40bfe7a1546e'),
-      (279, 0, 9, 55, 55, 'c089c997ea965416b0fda611986b9032fc64d0078e2e7a63ab02070ed4d4e06e'),
-      (279, 3, 9, 55, 55, '232dbf89d0e92fec24a30c84cedf3313b8e8c451f22104c11a1c4377e571771c'),
-      (279, 6, 9, 55, 55, '2628bccfc229f0b8b998c5b4a0321f83c6f62d31785d21bddf4256f7e851c7ea'),
-      (280, 0, 9, 56, 16, 'b376679df70fc00756fc58803d1182a2433e3d48dca46271be119e682a843661'),
-      (280, 3, 9, 56, 16, '4d543005d7875e425292ab3a03a1cbd3716628ce1219913a423f6950673685d0'),
-      (280, 6, 9, 56, 16, 'b0c6e0033f1f2eb09f7017c7bef99d3905094878d51af055bd72a05e91f84771'),
-      (281, 0, 9, 57, 17, '8dbdb21b6a2067abed2697673eb4048d44ec0ac7eaf1e7972265e7718c2461c7'),
-      (281, 3, 9, 57, 17, '9dadbce8af6f63dc28c75eb5e8f70b0973a891a715b3e3ca9265cee2ec1119ec'),
-      (281, 6, 9, 57, 17, '5c37df3c677e90e8e4b8ad760e7a9d7122e49e5f8403b2b369e2c331a15bedfb'),
-      (282, 0, 9, 58, 18, '2088f95afb21412ce9b2c985617aaaea649044d5562ac6752df8770d3c76134d'),
-      (282, 3, 9, 58, 18, 'd110b9607622a23592b492b42e0ccebd9328b25914e4f61480a088dfd8473d7a'),
-      (282, 6, 9, 58, 18, '331ee14ea9e707bc7de301bcfa7368e21fe45aaaae3ace7c7532086dac16f80a'),
-      (283, 0, 9, 59, 19, 'e84e34dc4b0f15c87307052d7aa48d70a851cfa796e8801cbc2c4d576cad97e9'),
-      (283, 3, 9, 59, 19, 'dbc3a5cb51ab019ba1ec9dd841bc5584c5ffdbf99373f187e0386694680dff96'),
-      (283, 6, 9, 59, 19, 'aa1a6c4ee7805d4fb8bfb8723e715a1679c26189043dc0de91a3432b97274e0c'),
-      (284, 0, 9, 60, 20, 'aa3cda610485f81e633e41b84f8b108da189337596527d7e82b65144132e311c'),
-      (284, 3, 9, 60, 20, '0b249ef8a0a61392989855f01aada4462728d4cdc34147165767a1a2b66d4d38'),
-      (284, 6, 9, 60, 20, 'f023a645b65fc073fddad85eb2a7fdb011b49acb4e00f69c1d4a7cace4b6e809'),
-      (285, 0, 9, 61, 21, 'faccdb6c764dd6e266bd72bacb2fb3443f8b79dbc220513d13c914da52d79cfc'),
-      (285, 3, 9, 61, 21, 'b7e9bb82ffbdba377a7d80d6d50c2b245134028581e8788ff73cf6673398c903'),
-      (285, 6, 9, 61, 21, '535d009cf1eb24cd490dc0b9372b61653ced07f533cb4d0aacb0badf6a182ec7'),
-      (286, 0, 9, 62, 22, '6fe1806e79856aad39ff3a3ec3da326f3ed3f76013d34d7078763f44d62593f5'),
-      (286, 3, 9, 62, 22, '61fce86c9ee6f09b00a6970e9ce448658aa4efc70d9dc52b69e214fb11803983'),
-      (286, 6, 9, 62, 22, '9154d0d1abe116a73cf1ce17f90261f32a4ee82b47f1bfa0968c394b8de314cf'),
-      (287, 0, 9, 63, 23, '7af875c080872235b2f205194d12085ea60120beae0c46e90a78aabb2611da97'),
-      (287, 3, 9, 63, 23, 'c8dc468cb50f3c5c32299b5ecf5ac7857b3e80b712dc5545a1b896681be505e0'),
-      (287, 6, 9, 63, 23, '0b883d0b25e89f03d7a899473a8a663fe54fccd66ff0220c2f88c8328fead8e6'),
-      (288, 0, 9, 16, 24, 'fa7613f84cde3ebc469a327e00ae772a647f3e6c0237e368e1d7e42cb3f67c3a'),
-      (288, 3, 9, 16, 24, 'bdbc57a5a5ec359cf039e38c83adfed0f84dd6b0dc365d29b24d8458b88ecf4c'),
-      (288, 6, 9, 16, 24, '551dd18d551dac9be38b64395d45c5f7c7b3d1f1845097623fbaaa32c6a25f17'),
-      (289, 0, 9, 17, 25, '5abdd05bcd748098c718c61b74ffca55333bc9eee7b0b2c86a3e3ca05a29942c'),
-      (289, 3, 9, 17, 25, '0a515ea12cc55129593e6b7c30ccc3007373568db556c065e7f4987e94ea4876'),
-      (289, 6, 9, 17, 25, '435bd382ddc22bdc3ba6761c69bb52dd92939dbe748e41947228cdaf5e805b53'),
-      (290, 0, 9, 18, 26, '96119b1e8840431f42dd80a1d129f9a79ed0bfde6665f41103b569c15915d38a'),
-      (290, 3, 9, 18, 26, '1ec0b9fec820dd6fbd77d825f9071bc8a1a793f2c714a7b539f8dd3e2aaab462'),
-      (290, 6, 9, 18, 26, 'b0ae413da840ed115d4339db976ce9234b1c570a074d56ffb2a3a2cf2f036fa0'),
-      (291, 0, 9, 19, 27, '6adf155578c74ab47ebb50eaa9011dc017a6137c27ef5f987072d9c3012b9994'),
-      (291, 3, 9, 19, 27, '910e3f298620d5a8ded66f57032b78f4dd0a202b63578f44a72a9d2d67bf6190'),
-      (291, 6, 9, 19, 27, '3db85052a1f54481fea8cbacd6713b18702ebed1d20e96b22581133e49361b20'),
-      (292, 0, 9, 20, 28, '158218014d9bc35b565f0beeb974d059a49c86d31dd24d913d68ad4068fabe7c'),
-      (292, 3, 9, 20, 28, '08473f986441151a57de1e006b02b414d740a3d3ccc4a27999473f11491a3df1'),
-      (292, 6, 9, 20, 28, '10feec623acf88e22a0a8af7ccc1e7d21438c8f2f710c9871da12055a9ec65e2'),
-      (293, 0, 9, 21, 29, '7285a406223a2da3dc6452830c784aaf381c2bef887f1196044cbfb06e0f732a'),
-      (293, 3, 9, 21, 29, '3c3069bfea3f89c3b74150b0de54390cd514378eedefa8b07833671224df9256'),
-      (293, 6, 9, 21, 29, 'fa71f023cdffb2acd89235125df9a67c0914a96a71b44aa465eb6fc910451f59'),
-      (294, 0, 9, 22, 30, '5b394734dc67f65463477f9b02eebe1671a68ec7b2e55f544156c8e46507ae3a'),
-      (294, 3, 9, 22, 30, '519e294008074f9ad42dc74bff6ab7d6588b6fe46c2c8fd3a34e203a63b2a4d1'),
-      (294, 6, 9, 22, 30, '16f4ba5e3fd30dd411293cb1c15b6e2e186e635d8f9500296a894690bf879934'),
-      (295, 0, 9, 23, 31, '1228f32113a078f587e18326bc8b8409ab1abc73562c13931d0d3767ba77145b'),
-      (295, 3, 9, 23, 31, '3bc7bfd72caba3ce4b90d8d8c22b115871cc4c8316e40d111f88bf9531c48007'),
-      (295, 6, 9, 23, 31, '9b46b7204bbd0c878e892518cdee8fc9c4055b98219dd2fe9147f68068f66034'),
-      (296, 0, 9, 24, 32, '0bed753309d414baf564eda241fa1627575927c7efe92552f3fb9956a4297649'),
-      (296, 3, 9, 24, 32, 'e6ec2966f5cf0fcfe201f5762dbdcf2c4ec3e3dc2ca2e70d7665e295e069c1b6'),
-      (296, 6, 9, 24, 32, '04be33115728d25d8b89ae08c6073a6043c14e79a83b9596b08efad545f71f31'),
-      (297, 0, 9, 25, 33, '9fa91f3fce7341843e48ceace516bd08da710e7cf5074fcfe51f12377db13438'),
-      (297, 3, 9, 25, 33, 'd9b271d5a067594a6dfc1170e1a60c9aa5bd473e2982333b7bc26980724bc377'),
-      (297, 6, 9, 25, 33, 'eac2961ea609f2e6eafe50368faeb46d2da765fc609edfba69278b2c03f59bec'),
-      (298, 0, 9, 26, 34, '5e96039dcfc56f38422a36c03cfb810642de6df810825ec6e358e88ab0e8cd2b'),
-      (298, 3, 9, 26, 34, 'd35bcbee9d2fc86f3f2e290e0bf5d6deeaef42f9adf25713239cc5c4ea4bf394'),
-      (298, 6, 9, 26, 34, '1bab0d37e7f0098941e372ef4a45d413e7cfa8cc01760cd3c38ad7a57edda867'),
-      (299, 0, 9, 27, 35, 'ca9800db715e24bad76ffcfa973242dd0b9eb7d73b51f1faceb69c412a0c5e4f'),
-      (299, 3, 9, 27, 35, '9ff75062bbca0570cb8e72ac45332ab80e71ede5d964b67a784ef73e9c90b392'),
-      (299, 6, 9, 27, 35, '8265c450c7daff3c1e9778d11a048190222975ccb6129a0783feec0f2fa54174'),
-      (300, 0, 9, 28, 36, 'a721509c60a5a76bbbc11ceb92823f21b2b9f5fd000d18c602f715221b903ef9'),
-      (300, 3, 9, 28, 36, 'dcbd9ca2e1781415b9ec5788e690863dea5612664beaff3389e5e1d892f4890f'),
-      (300, 6, 9, 28, 36, '3fb5156ccd5583ad79c81cdab97382c2c899e4ae2039083f67c302e5315aac24'),
-      (301, 0, 9, 29, 37, '9a2a7d7b54434c1d86c9efde7c86fbcc29a4e3d0d19d1cdb3c836347871022cc'),
-      (301, 3, 9, 29, 37, '557249e1ead2188dff8329ae26849535dc10c872ddb651cfab353c18cb5af861'),
-      (301, 6, 9, 29, 37, 'c54227ad4c58c39eac0572bf59d3a8b514b63ba4402bf71ec9e694607f8b9863'),
-      (302, 0, 9, 30, 38, '4ff3e54d4aa752cfd3e6a06dad92c426134708b684b1104ffce983f893a92a96'),
-      (302, 3, 9, 30, 38, '2b59123ef34cc7b768662a4dfb039c8500a6accadd58434fb8fca082b6ac2e20'),
-      (302, 6, 9, 30, 38, '6245c6d5ec6c392fdaba7c4e19e4f5c278d72be9329137fd56724ea22e98c203'),
-      (303, 0, 9, 31, 39, '23cbe3b187375fc3d87f8e548fae99c6badebe003507437099d575f75cd114ba'),
-      (303, 3, 9, 31, 39, '4ae5f7b939a9a9156c3b42494f32aa3b127228c5eac6e2a804b189cb25a02b56'),
-      (303, 6, 9, 31, 39, 'af803631fc1cde9efa98cbf705afc2401f5762407a2300737558885d748e315a'),
-      (304, 0, 9, 32, 40, '1750967e9c5a103616d7403621019ae76be133a01c1dd6e05d511f80e7fbc43b'),
-      (304, 3, 9, 32, 40, '1869a6de2f4a0514bfd241989aaf2e2489aaeab26229e467ecc3af353ab0e296'),
-      (304, 6, 9, 32, 40, '4b3a8f5b5b90bf596267168561aa67b7429390fc1fdf256ecce0f8101c5d1c05'),
-      (305, 0, 9, 33, 41, '86b9a854c26d65d8654ad4bdf99e3af46736cfd2aa52f31441600863e48990dc'),
-      (305, 3, 9, 33, 41, '68e6a246a467baf89b5b52ba998b1292e42f4388825e3ad9c492fe31b83f0646'),
-      (305, 6, 9, 33, 41, 'fb2389d1698d4971c1d05d5c4bcdf88489b9836f60107ccba830c8509c0cab8f'),
-      (306, 0, 9, 34, 42, '55a4a359e245c8ccbc9c3772073270ff80c0829cc453ba359c3ac62bacd47fe7'),
-      (306, 3, 9, 34, 42, 'b1af01c8b3fad6f922583311a6611fec0d4900bece3776823174ba33b6d15bfa'),
-      (306, 6, 9, 34, 42, 'c32cb8b4b586513d2c4e25b007bc16a85931b665b2bb3ab723c7a6f78290bd21'),
-      (307, 0, 9, 35, 43, 'a9e9f34f84af6a9cea23e5a4e310b41452200a621904f3c45cd3ec9ec6c2a07e'),
-      (307, 3, 9, 35, 43, '39f36f3bbad047e2d06a68dc681ac6cae46dac9b18ebf8c7a76e663150faf64c'),
-      (307, 6, 9, 35, 43, '06bc29c869a670058d994e6f0ed24ab5f98cdf3a3ca35d78cf9424170f16e179'),
-      (308, 0, 9, 36, 44, 'ed7b3a76d5d4447aee2fd7e5f638ffdfe172c0acbc7534a07a6a5c93d972de31'),
-      (308, 3, 9, 36, 44, 'ad14d7cf62a608b0e3d5e8a8ef5335c202a66f1c21d6a232879d44138cad3a97'),
-      (308, 6, 9, 36, 44, '6bc089f90d6103029d4ae2b126ef8476c274963a31408b6b93339a1ef54e2a9f'),
-      (309, 0, 9, 37, 45, '631293f717c19489de28ce1175cbca7a0fb9abf3c09bb81ef183233c11b26cdf'),
-      (309, 3, 9, 37, 45, 'c975fe95a7bfd2f74c875d837734ed3667f39b1300ce1aafa5057e60f8a0d88b'),
-      (309, 6, 9, 37, 45, '9c6f116cbe663819ab933cb56929febe0abaf7162f829cb775afd2f81843d071'),
-      (310, 0, 9, 38, 46, '5527ae914e2126800cc79f48aa56d9c76d2ddb552fcfb3ae66ebd0ca51987d36'),
-      (310, 3, 9, 38, 46, '8ea93bb7643fafec8cdd413bed5bb4dbd93e82aad39bbfed57cfbf600e192d8d'),
-      (310, 6, 9, 38, 46, '95815902def3109dec348d5c3f555e892ea3e582ef76cc32536bb1ff3ae7d4e5'),
-      (311, 0, 9, 39, 47, '6b1cfbcfa532f8898f2d99d3d38aaee417d58821cb2ee92f26ff227c89d58098'),
-      (311, 3, 9, 39, 47, 'e59862b0e0a0919b461b8e5c8ed9f92a8eb31bf02b85bef3e16ad8dd0bd54708'),
-      (311, 6, 9, 39, 47, '4153c2d5395c62374155b9b909c74ae11b55032828aac63b829b41dcff9af35f'),
-      (312, 0, 9, 40, 48, '7a3741d4252b0c352794df060203a360ddadc1fb363dbdb720a9efe2906105b0'),
-      (312, 3, 9, 40, 48, '0a4441d6c8e8601e606cc0454e7600f31f7a64632bf5e44219be212738a37d5d'),
-      (312, 6, 9, 40, 48, '6805870ac7e60a876631532cc7bce5982c74134d1c8af3da7e58782852d2a4e9'),
-      (313, 0, 9, 41, 49, '1d477fa13cd4bd445fd3cc38c991a0734855f73a6d7f3e519f74a8ece74417b0'),
-      (313, 3, 9, 41, 49, 'f6154934c8b1f716d6515a21f04263672290f3e3f9dcb7bea1d9a4ee2e50bb88'),
-      (313, 6, 9, 41, 49, '230f130df28fd8b3e99d71cfac09f75c0e7a9c50fe58111d08c856220b44302e'),
-      (314, 0, 9, 42, 50, '6ee3f1907452b3fb351a67e03f0f26467ee9092bc863bbf7dc2b6d51ad22156e'),
-      (314, 3, 9, 42, 50, '36405d492e6ae0b4d51d9f37fb0808c123847ac16fc00a8ec93e90e5592d9c38'),
-      (314, 6, 9, 42, 50, '2feda3a79b8f5af2ff3c02b2c4ece79259e3d2c2c4dc764bdd30adafb7519a33'),
-      (315, 0, 9, 43, 51, '4534838c832844fe65fd20a583cb1240d39c5969ed1b63ec6fc30b5dafaf973b'),
-      (315, 3, 9, 43, 51, '44f50763ee5d47b7bca02d7b94d01fa6c35ecc9d4e56df299cb9a9c265e191e0'),
-      (315, 6, 9, 43, 51, 'd3a61c9691cf1c18c7fd662cc2f18238996700fff7d0edcfebaa700cd6618de3'),
-      (316, 0, 9, 44, 52, '39e908402c9f8c5781fb47469d1bf746c14d704786a0825fb3d4c46271a08684'),
-      (316, 3, 9, 44, 52, '38f871d78fe138bd2b9304d7b5362125a930d5afb85a37a2bbf38f19d12832b2'),
-      (316, 6, 9, 44, 52, '01eb702da8e48cedf2a8a861b3beb6144df28ded2bfc71774543428f56721cef'),
-      (317, 0, 9, 45, 53, '9d91d3a1120fc0c7da8b222f566ccd0ecafd3dc16f662b72c204c776b2f5f358'),
-      (317, 3, 9, 45, 53, '8978687db0957c1dbe3353c42d640d1fb76f914f979fda768169d74f8abc194b'),
-      (317, 6, 9, 45, 53, 'fb3f7566ebc87105e321fa8de4f59eb25daff8691a15e2536dca631ceee8cea6'),
-      (318, 0, 9, 46, 54, '23f22dcc3235881a3940b7cdec6792c0f053427a694747f21514d6b225d166b1'),
-      (318, 3, 9, 46, 54, '35cd228b4bf0cbbff96f478bae471028c10a9f271722e339801a4775c7015f80'),
-      (318, 6, 9, 46, 54, 'd203e4aa1b587fa319cbf87a6513a545e50f528531a7157ad42146514580ad17'),
-      (319, 0, 9, 47, 55, '5d21989acc6889569ea553064b9958d6ffeff82c2de85421f8599dea49a7e476'),
-      (319, 3, 9, 47, 55, '6274a2314b4f78e210dfe3965dd1a7ea7f82b8a844e4bc57ea28fb079185dc7e'),
-      (319, 6, 9, 47, 55, 'ce9fd857c4fe0586637b0c340d1ffe96e56a2132d746aef60585df8afffb8882'),
-      (320, 0, 9, 48, 16, '68f020bf50aeb00a04872f04f8f39d8f7d470e935f2e061e597543360596bff7'),
-      (320, 3, 9, 48, 16, '62f15caca5ef32d7250ab7849f9a138fe4dafdd45ec00f80df6631151e4e3691'),
-      (320, 6, 9, 48, 16, 'eb90e0dc55b1f8a9f7b7569b33d09097c2b9a61d0b5851048f39e858a5212fbb'),
-      (321, 0, 9, 49, 17, 'f79722e8faaa8aa36746b6d5a54ca9b221fce31f73c69616440bfb049e87f7f1'),
-      (321, 3, 9, 49, 17, 'bb62010e5365f8f0798c858e87115abedb9f459f9f11c4ab9eca27b76d1cc971'),
-      (321, 6, 9, 49, 17, 'e9d681fc1a63d3115296d197818fa99f21ff6a2ce05a4435b9093c3b3c437936'),
-      (322, 0, 9, 50, 18, '819fffa21e32a5c32c37ec00a2ee326bf5dfe25d76e43c7c2b649a12b80c95e3'),
-      (322, 3, 9, 50, 18, 'ad3255bc87eb4ecef869bd7de9ef177b86a9951a8aad6f37c9287401b4ac1473'),
-      (322, 6, 9, 50, 18, '6f348e9aff6799d3e5beba62ceaa1c1f31428e06d1a9dc18bd5bf364c0f0241e'),
-      (323, 0, 9, 51, 19, '7ea0d1349fbd6e31d562b2c8486cd4e73df3daf1c8c63ba8a16382792fcc84a8'),
-      (323, 3, 9, 51, 19, '24c00a9f3d4b11b2e1a83d32704c37a6e1b5e569e488dcf7dcc4b17805765d6d'),
-      (323, 6, 9, 51, 19, 'ade93aed7fc55e4b08f7c2fa875ff415826b763bdc6d416c52b4617f1200e34c'),
-      (324, 0, 9, 52, 20, 'c9750fd71d827678dfe81b55d6ef17c12453ee0eb05c8acb487bec6791052322'),
-      (324, 3, 9, 52, 20, '219de635026f0f4a07fbd7b687ca70b37f1d1e38686cf770431271a276b700f5'),
-      (324, 6, 9, 52, 20, '53c40a9aa597d7e0009de790a9c6a3c575df9d5a9c200368c1a0f2e5a3c3d9c6'),
-      (325, 0, 9, 53, 21, 'c23e6e1b28206ee891f6e2f0c17a1152ba4b62f991f540acc3876b78ab579950'),
-      (325, 3, 9, 53, 21, '50aaec1f20c6d18d26fc2d4967af3d30942dcfb4819f3e302eeeef19974751ca'),
-      (325, 6, 9, 53, 21, '133c7672751a1bc26e5549b812dda65f0a3fe746f48b952cba06d3d29abf867e'),
-      (326, 0, 9, 54, 22, 'fa14b64a2197bbd9090eada04a10d834a7fef4408bc9260cf299b526880d9bcc'),
-      (326, 3, 9, 54, 22, '8f6c55c79b6577635ec1511ecbc6f78c0989e067ac2622fb7b825fa80151f66b'),
-      (326, 6, 9, 54, 22, '4d5e65f3b0f8b00aac7be9338c117ed6052ba5174d8a20c83381e27cca5a587e'),
-      (327, 0, 9, 55, 23, 'db1b98e74cceecf628ad594caa9b114b1d2fb24edf3a5c0a5042c635c750a87b'),
-      (327, 3, 9, 55, 23, 'dd5a51418365d4674e7ab9f25ab94934d82d5702d1199f23b9676f91b5d747e8'),
-      (327, 6, 9, 55, 23, '3248260f472d04e3d6f29dace769bef5dfcc3b57a147844f2d9dbdd16c8d19f8'),
-      (328, 0, 9, 56, 24, '14c6cb17ae0c5a10c3cd289bdf2f936a6cc64c3c33d2054ef0b5864d1c7f8a68'),
-      (328, 3, 9, 56, 24, '8e8957970afdcd493f91c0c3baea125109fa4dc9a127916812340b5ebb24cb4a'),
-      (328, 6, 9, 56, 24, '552a5cbc2aec3ef8193b64a084977f019dbd9e0dbbc3afcf318ee38f006f09c5'),
-      (329, 0, 9, 57, 25, 'a5c38ff14e9d719675355a9bea47a578debba8ee756e807d117d541fa8589fe0'),
-      (329, 3, 9, 57, 25, '985a017c12f20811761e6c3b1a4fcbdd890dec3edeff563a81370d5222e23b35'),
-      (329, 6, 9, 57, 25, '4c8a3144758b99c348e0256991ea0305de72c619432960238cc9fea24deb6e2a'),
-      (330, 0, 9, 58, 26, '18c399069835981fbee9e5b781689d77d267fee4a182f22c435e73f0ade1c895'),
-      (330, 3, 9, 58, 26, 'd94a40b0b331be9cc4b76dd7aa4a5ae7404c4d3d4f5004f306b9a91944ae4023'),
-      (330, 6, 9, 58, 26, '9323d693082b00d21bd10bec890a338c03413449a27f739459909310ddbda2b4'),
-      (331, 0, 9, 59, 27, '4fffcb25e04286876b0801a3740146766e2abdfe9fb6e0f5b3a4d63a6016aeff'),
-      (331, 3, 9, 59, 27, '129ba30819ae15d49ddbd42e1c4ec85901dc4225ee723474fc00e5c8038b59fc'),
-      (331, 6, 9, 59, 27, 'bc5d856bd497bdf32c7b3c67df2cec619efc00c04b94051089fabfe57a31a346'),
-      (332, 0, 9, 60, 28, '0318b86dce0306e15022116b4855f84a4857e452dd74fed9b90ecf828525f5cb'),
-      (332, 3, 9, 60, 28, '1b28b3340673b97bd4f75ab4cbb4503054828f04a4d83c24589ebd6ea858e3b8'),
-      (332, 6, 9, 60, 28, '19b4d362fbb249cce08ae987b4b94b3a1962509f01a031fbe57d4cc8a2630175'),
-      (333, 0, 9, 61, 29, '823098a7803fd8a6b35ae9d8f8b7d673596b633a68ffc549ccfd5295e02ab674'),
-      (333, 3, 9, 61, 29, '147b66ec1530e0cc9d50806a4a4d1364e36fcac2e4e5792bcff1f48c011bb6e1'),
-      (333, 6, 9, 61, 29, '2adbb2a87c1620a6adb0c6f25b466209b5ddd6ae05333bf0673793a7a1103a1b'),
-      (334, 0, 9, 62, 30, 'e1d3fa89f0620c307dc46aabae6b84041f1ac9b452fb326d095b9b12a1740ff2'),
-      (334, 3, 9, 62, 30, 'ce7c825540b5eae06edf3b0e69a83a3e88e9086546a55cc0d950de1707929adf'),
-      (334, 6, 9, 62, 30, 'fa20619f0a2c368fb3722a233973d481ce4a5adaa08ae100cbbadccb0e7352e3'),
-      (335, 0, 9, 63, 31, '9f64f1f39279d3a6a3f63b53c169a5d3799544335916f6921f4bf3c2d786bde2'),
-      (335, 3, 9, 63, 31, '562bd8f532fb71b7fd7cfa9bd7cc7d1186d2e26a414e2b94c85125d882818af6'),
-      (335, 6, 9, 63, 31, '7a0aea297e79f28211f06dc554514d2f093ae0caa9507baca52788fc2a3ec53a'),
-      (336, 0, 9, 16, 32, 'd435f644922490082ce186c00c4bbbe55370fff6da07356f1c2c6a6f078a2b30'),
-      (336, 3, 9, 16, 32, '395552329cc173f9554eae17fbf0cd1db9e91040a847aac0bcdf135051476e31'),
-      (336, 6, 9, 16, 32, '04e6e32e16675473172f12ae3c44cbc750091c2d5f8bd41bdf420c44e6178c2b'),
-      (337, 0, 9, 17, 33, 'c8740dce7c1f40f8c5e5099c7b0634f313dcbb49e0ea030a24d5b8e118734163'),
-      (337, 3, 9, 17, 33, '7b06030a46cf296df4e30998f126b6a06c337e8d5a744c232385f9e1731a9b34'),
-      (337, 6, 9, 17, 33, 'a921e9c0c121c27225c1f41c8fb5027dbae061731aeb19c7ddb1172376145b03'),
-      (338, 0, 9, 18, 34, '718de6ce44eb09af2204362aabfd3384b9c132414bc3b4e79e2933475af33b99'),
-      (338, 3, 9, 18, 34, 'ffad07482743f47570b8991fcb36beb8b8339ce2cb1b4f391fc94860fe9efdf9'),
-      (338, 6, 9, 18, 34, '9ebacf864ae03b8ddad143ce26899b1cb95ce3ad58daa67ed462208ae7c756e9'),
-      (339, 0, 9, 19, 35, '3bc692c035c7aff3356c9351e5354ec95a527085f39ebda0ea780a29c097f640'),
-      (339, 3, 9, 19, 35, '1db82243956ae6393c1f7b95b8ea27942239b7dd0eed69f3e3b2be43025dce0c'),
-      (339, 6, 9, 19, 35, 'd762ad07a72a30ccd4ffb33cb62b28445256e7bfa50fca97c47ce0cac09be18a'),
-      (340, 0, 9, 20, 36, 'e50f05089f51080f856e3c0b2685ef9dc8b1740dbbad8e614d73dfa4c3266290'),
-      (340, 3, 9, 20, 36, 'ec42b3b012d558684d9496bddb54bf7b55d62a5b56535af06cf5b7604f3da6ca'),
-      (340, 6, 9, 20, 36, '4f91cc43069b89561d54c2d5299b7dce0f4517a9f32af890a99a38e8e15bb90b'),
-      (341, 0, 9, 21, 37, 'f0ba6132ce731dc4bfb2238356b72a666e7b48fe3c05e10382544fad15604895'),
-      (341, 3, 9, 21, 37, '2f2e993155944157b2019ab4f2387c6acf7615443e72edecbdc5bb5880b16757'),
-      (341, 6, 9, 21, 37, 'cca6d4291c1357ec09bcea7cbe447d7d6fce002fed45c2438b476bbb9369401e'),
-      (342, 0, 9, 22, 38, '00a747eaa132d7c8a3c09f11d4acc3d0de2056a481a9371dec78b1047dce6ea5'),
-      (342, 3, 9, 22, 38, '0fad0a5b64e60cc9101f44b5a7b1c1318e5d310216bf1a582a44ed3a2082bfef'),
-      (342, 6, 9, 22, 38, '5ce66e6e39a0e474f7457fb87dd02b2afdbc8a76d7769ebe521505b07be47178'),
-      (343, 0, 9, 23, 39, '0a44123e28bdbede1ce730bf84ff6462c67af184e939d10ce8546059f6edba1f'),
-      (343, 3, 9, 23, 39, '19a2f07f0b43da9db32c72391b54f8c2a222b087e5ad92e893489aae9b2a42dd'),
-      (343, 6, 9, 23, 39, '1342059f7f9a824e0d0d03cf542db9ee33d3a0aa89e0b57e9cc283ab9eb788b3'),
-      (344, 0, 9, 24, 40, '587766bc3249b80c9fc35ea06cffb996079cd0673483480bc83c72b4e96ad0e8'),
-      (344, 3, 9, 24, 40, 'b6c7219574c76963c260480551e054102d8e4cfb1d1a63ee8339e9a335957d7a'),
-      (344, 6, 9, 24, 40, 'a63c2c187bb796c4aabfadb60ec6b1c76fdd586a0c0b2d2666d5e34c90397117'),
-      (345, 0, 9, 25, 41, 'e42fc03bd95f41d0d7ca6a29c576f8665fda4786862da6a762ce27ec4c0ea064'),
-      (345, 3, 9, 25, 41, '540e0c647db8d694f309b0d25e778ada14f0e14210a110d52f989b2a85c2a4b0'),
-      (345, 6, 9, 25, 41, 'a73c3909ecf1ada4b56acf1f61593a7eff03ded0a43974795734721f06f58d3e'),
-      (346, 0, 9, 26, 42, '63a49e592730d6892df41f711c5b881dc09dd09727a0bf30903fdf8c4641390b'),
-      (346, 3, 9, 26, 42, '79be8d123bd3e7dea41302e7dc999a5ce72118f2a0eb99f5452c3e0a13d643c4'),
-      (346, 6, 9, 26, 42, 'ed087ce086ac21228d3abe7819c659d88a9c7d58e10b5f0753e6bdd2d1fa6bee'),
-      (347, 0, 9, 27, 43, 'd1b6c49588522ebc6df0bc1b1af7afe9e153654ae4f5c96d5237544906a5c514'),
-      (347, 3, 9, 27, 43, '31398a8af6fb6bde43d6ecf657b0ee8d7e2870065856a24208fd552d34289d8b'),
-      (347, 6, 9, 27, 43, 'a9efc1e57207509da598640861c39621054774566425af238d28ed343dba6e18'),
-      (348, 0, 9, 28, 44, '2cb7b33714fab85b60f942fada6f421e1970c76987d65f7cd6be3ccd503d1b89'),
-      (348, 3, 9, 28, 44, '771eb7c954a8693c7c949765e4b07580aae53ccb5310588d817858fbda1f13dd'),
-      (348, 6, 9, 28, 44, '9b8681e08ca718538d63a1866b0927cf0f045fb050beb9294c96477ec8462b6d'),
-      (349, 0, 9, 29, 45, 'c28f6f19280b2ddeca3b3143302fbb2c12358a77981a98a2af4cc8c7c61aab5d'),
-      (349, 3, 9, 29, 45, '2d9281f22ef2518b0636b87e30117bbe8d7262d9847f5099bf39ca3f2af3f5c5'),
-      (349, 6, 9, 29, 45, '9189acfda59a135fe4c3fe830a2b47b866e0d0db65b4d0cd5395d1928ae1ca7d'),
-      (350, 0, 9, 30, 46, '7b10453e3f69c0082e7ebc129f229c5f580a33ee847c9202034e63b4678b9d6d'),
-      (350, 3, 9, 30, 46, '255fef801ecadf7ba0ae2636b89b34ce056b0643cf1bafa8799aa5ab8416d61a'),
-      (350, 6, 9, 30, 46, '1441627fd5c52ddc3db0a5ba1b9906dc73d4c435715d7ffd92bb9aabd723466b'),
-      (351, 0, 9, 31, 47, '2937e3390b941c2c76255ea46e3c7ec7ee0bc230bcd376d52963a8e1e46daeb3'),
-      (351, 3, 9, 31, 47, '93f51739fd251d89a12bd7069901e6896d33e57d00a73766c43aad739ce9e7c8'),
-      (351, 6, 9, 31, 47, '0083c0f1b988d4206842a50b86cd6ee9026b680d5ccdec96d3640d2cea2f5758'),
-      (352, 0, 9, 32, 48, '7b9afd84a16f814f2eadb5d8e8b2cabae35c50b5c6891cc0344ead1a6cc69404'),
-      (352, 3, 9, 32, 48, 'e4dd71b23c4693759cd03bb38f5212f07e2361fe47eb4424931be7b975f95cf6'),
-      (352, 6, 9, 32, 48, '8ca4fbeccd529ea36cf91959b3ffbe023543c9d747d7d7406b0461cdf9e9e3ca'),
-      (353, 0, 9, 33, 49, '3a6156049a83670624a3f0428d0ebf631721327ad0bed8a40dc31f68d96ab1e9'),
-      (353, 3, 9, 33, 49, 'a8442072da8362cf3a040d454d8654dd40995762471ff1361e59ce366cc85bd8'),
-      (353, 6, 9, 33, 49, '4747755b0ba1a59f20361daa77b6f1aad9d9b047dfbbbe4b5f551217aa8da962'),
-      (354, 0, 9, 34, 50, '90fd0f3ede3d97d5f96fb77fb1718ade20bdce1eef5704074415d22566489dca'),
-      (354, 3, 9, 34, 50, 'fa26003fd86bb6c8a232d0a49cef15f24c73800e6a742995bf310edbd107c0d0'),
-      (354, 6, 9, 34, 50, 'ef3d91a1286b5a55f1a6d44a8e0f0ab1deb7ca09ad40b7894529e13b176fca3c'),
-      (355, 0, 9, 35, 51, 'dca7d284fc43217ac6445607ed3b2163fad763297566adfa3936aaf138d64cc7'),
-      (355, 3, 9, 35, 51, '8553d3714295555b3b29efaef55d85d025cdae176d81ce954d5475cf8a8e6bcb'),
-      (355, 6, 9, 35, 51, '0e4d7e3b71329a12eb2ce4562b78b8bc1c4b192e47c0b2397d75da4a1aeeb620'),
-      (356, 0, 9, 36, 52, 'ed2df4df560ae35f96e06de8c8ecf0b20438266c17913a164ec813550c2f1e1d'),
-      (356, 3, 9, 36, 52, '5bb84bf0f5dda5347eb235b0b79a3ab61d595b8d2660d8d6c32b68381122ac5d'),
-      (356, 6, 9, 36, 52, 'ff1b2fabc8f97027dd0ca24c01877998d6d940821548c94499633428417f9dc5'),
-      (357, 0, 9, 37, 53, 'cd254bd7bd616f014d062affd4bf30a5a9ceab7707605d1d72f147cf1a5e59da'),
-      (357, 3, 9, 37, 53, '53d8c843cc005cc5872bc10d68e14efc3fe5f059c5a7fb2b1af58161e579bc65'),
-      (357, 6, 9, 37, 53, 'f41ee438b0e249910719622bb4e46896f7e625d3eb65f92a5bdceea208f5c12c'),
-      (358, 0, 9, 38, 54, 'c54e8f87bdcb3cb4c62b0e62902137b3dc9c57192f9aa421a1d7d904b9d9bdcb'),
-      (358, 3, 9, 38, 54, 'a60b16cbc6fc47de9017137f87a73d41239e14346f9a42d82528e5a1876d4b36'),
-      (358, 6, 9, 38, 54, 'cc70200e78367c2d0dbe7932246237f90bbf1f2eb559b2b98edd2a71c3b0b744'),
-      (359, 0, 9, 39, 55, '2951628a98327a9c6358972b64406f3344a40ae64ec40937d37fa814327143e7'),
-      (359, 3, 9, 39, 55, '87940fd9f8e84d794f5c3363cdfccb091a86356bd1d6e9fb321866f824aa2b8c'),
-      (359, 6, 9, 39, 55, 'd341201c9bbbe8ebb452b09ca27827690c7de2584c80cba0a59fa9e1ae3cc626'),
-      (360, 0, 9, 40, 16, '969fff50bcde4211daff0b3c7f3b5a49d29dba1c4e9b2b3708d54839fcba9ad9'),
-      (360, 3, 9, 40, 16, 'fc891fe927e275767aae98919e5233e10ec90495cd058299408a52625e289354'),
-      (360, 6, 9, 40, 16, 'bf287fb459bd4c393f7bbb44e7c9b2712da441d6b68337db921a4d2b6027ce98'),
-      (361, 0, 9, 41, 17, 'afd9e97e2bf1c4406ce13ac0d812bcf419f8261b5d2558c3634f9e293b14b84a'),
-      (361, 3, 9, 41, 17, '445ddc53fa96e6b10cdd49e00e8000c8893f56b16de3a25e87249dd9dac2bafb'),
-      (361, 6, 9, 41, 17, '423c71b2a4997c6536910f90c9d1a558f5f6a52680188c0b406babd61c227cfd'),
-      (362, 0, 9, 42, 18, 'af74c3e02101ebbc0382cfcc5cb963b56d6b1abc71510e1858ebd9c1cae39fdf'),
-      (362, 3, 9, 42, 18, 'b068ed5f3d3c69bb4dc26623672441bcbc04bf4d6aad9f9636fe522d32808578'),
-      (362, 6, 9, 42, 18, 'c1e82928161d1fa9a4afdb6a945458e72e7ccf8d1eb375a8abf226bfa5e1a51f'),
-      (363, 0, 9, 43, 19, 'ecf36c9b8efa998b06adf5167c1910c74f9e0301b267a313a091b5021a0349b9'),
-      (363, 3, 9, 43, 19, 'dc4acab29e207b6550b65a762243c2e10624c235436f71c627843179bc9a08eb'),
-      (363, 6, 9, 43, 19, '21e816858683d51e9b7a004346f0458ac2be03938ba0ecbd922bc3e6c46b08a9'),
-      (364, 0, 9, 44, 20, '88d99b7b36eb92fff767e76a1c711394b3f873c67e9c25e082d567186817d6cd'),
-      (364, 3, 9, 44, 20, 'd967a2debd955ddc7f5179d9a5bc6524ea448f8f44ad784368a7885363780195'),
-      (364, 6, 9, 44, 20, '18c48f30f5f9d44ab4224bf6b3d3928d77af916f15001088f7ad7933c3feb264'),
-      (365, 0, 9, 45, 21, 'c9dfd4603b35c39df1304c51245db19a2ed9894f14a39b11bf8ddb86bfd5f8f7'),
-      (365, 3, 9, 45, 21, 'cbd86a79f8536fda17d6c6653dbcefda7741c14fcb43f5d17f0f86c4ff77d7be'),
-      (365, 6, 9, 45, 21, '86a5bec9ec2f055d77dd9a4911a056a72f6facb8b0ed4864a63db4bbec040c38'),
-      (366, 0, 9, 46, 22, '57ab134bbd06d6f8812a275b953e802b8e51ebf2e36cb10f334bd3a1eb418404'),
-      (366, 3, 9, 46, 22, 'bb417f73bd87e99e14558cb12b0f2468f5a679158d41b35fd4e37a0d57020c15'),
-      (366, 6, 9, 46, 22, 'e757258a3e9d3eb8fddb5ecc74dfbf487497d802833185becb45ebd9b71890d6'),
-      (367, 0, 9, 47, 23, 'a350b8a33871ace19c1453ac1e091dd0111bafe65148ae836165f7422128a1bd'),
-      (367, 3, 9, 47, 23, '91910cb1b2c4677791cf749b2326e717b26d63927402b413fa6cde39721e4ec7'),
-      (367, 6, 9, 47, 23, 'c7554e57e9e8790f8b1b8a7f16a54e4a31a8c20587ae8e0f0d7950f32425dedf'),
-      (368, 0, 9, 48, 24, '8377c0986399dee7d6a515e0ece0bc7285ee99de1a0a08ea6cd7cc555cc45fbf'),
-      (368, 3, 9, 48, 24, '3f70055fab97905087607c6457d163e79b93a47c84b094c60f000f4a9e06aeb1'),
-      (368, 6, 9, 48, 24, '1abfe45e849b3b0d9a8e6b142c11b1dd2e0410fe7ad75fc1ce1b5bff6c160df7'),
-      (369, 0, 9, 49, 25, 'e0678696f9a508beebe7a520da246222f1d7d548bd5109936fd0468142ab0fd2'),
-      (369, 3, 9, 49, 25, '96adf5b36ed4c926f678f8687efe3d2f2571934be03c03794408d3fa00d5454d'),
-      (369, 6, 9, 49, 25, '158d48e81cc7f02260d945d6615ec49a72ae682f922e9764bf25b756619d5997'),
-      (370, 0, 9, 50, 26, 'dc9783435c2ccc2b0626213998071c3341ecfee0d52f2b487aa4fd3d5823e499'),
-      (370, 3, 9, 50, 26, 'b06f13000bd8afafb08d463b8d43845f36a7e2ae6493bdafa5a21e541284b39f'),
-      (370, 6, 9, 50, 26, '1efe932891f4b4cc748465ef9a198424aed5b95300bd12bf4735d0180ce772fa'),
-      (371, 0, 9, 51, 27, '88fd1b8d82ce09fdc4fa2373204470d1f2162a9aafa9dfc0d8f59c318b3d03cb'),
-      (371, 3, 9, 51, 27, '9b9dfde71a3d3e0d404fd3b5deea9a3c9ade394b80364e082a161667d3a26805'),
-      (371, 6, 9, 51, 27, '66dee915908a109016ee0b45f8463006434395dee206f5a24185bf88a786f775'),
-      (372, 0, 9, 52, 28, '91f610f5a189487a088b8904ffcb1501ede3990344cb6c4e1dce5faf65c46c69'),
-      (372, 3, 9, 52, 28, 'b0d3c4389c4fd23ce7cb066068e49ce4dcf55225c1a9089e042d9d988a34391e'),
-      (372, 6, 9, 52, 28, 'd051f8b150c170d97f9d3dd0d07adee6ae8c243752ba0fd332c390c5f20ce005'),
-      (373, 0, 9, 53, 29, 'f46631cc554116a5a076770d3187fb544ee9556b3ab5ac8d536cd5b374ea5254'),
-      (373, 3, 9, 53, 29, '2471b4ea9fd24f5312213ac725ac9c701b7242f2248ef148ea438d8bc7676d21'),
-      (373, 6, 9, 53, 29, '6b2223b87893842ec5ff2adea74a8df84a288962452110ec5387e09ff5fc22ef'),
-      (374, 0, 9, 54, 30, '47a7fa0f198ca1283ad679c4d1033cc58d3d68c7920a1153fb6ccc6c905f79bc'),
-      (374, 3, 9, 54, 30, 'cbd9d7ba7ac6a0cd00972c8960b4c3c56cdf3a526a26eb1f3bf4db3ac0e0021b'),
-      (374, 6, 9, 54, 30, '3ea3461b2cfd3e59628adbff596af8596353831902831d3dc881669ecf308ad1'),
-      (375, 0, 9, 55, 31, 'a60f50d4ea6570811280de3f6f124944c323a45a396abdee4948c6632e82ec0d'),
-      (375, 3, 9, 55, 31, '5c46abcd1056ddc25849c55881fe597549d248694bfd460b9aedad80b683e8af'),
-      (375, 6, 9, 55, 31, '8d4d881a9015e4954bf88f980e4ce142516ce20cd16c0c80e748d5d612de563a'),
-      (376, 0, 9, 56, 32, '89f05ca7b5718dca2e25a191b97dc9c3649d17af10ed70f689b4efd4df36de75'),
-      (376, 3, 9, 56, 32, 'ddd62bdba7747b0bb814275983c1d3d199e81c69c5d0c63eeea389d8483d763c'),
-      (376, 6, 9, 56, 32, 'f8d4dcfb72adfea7fdf67f99e8197ab287a53a530e686a76f10b891118fa6102'),
-      (377, 0, 9, 57, 33, '6397dea6638fbea535b505c3e128568433529179e36b5138a71b97a84616fb13'),
-      (377, 3, 9, 57, 33, '8b359f6b8f7d578f71046a9a0f6f7d6048b34004e347e4552f35398954ebbef1'),
-      (377, 6, 9, 57, 33, '4822a7d54d985b6eb7969ab61742660c94c0865cc8c681dd46e3e56396dbddda'),
-      (378, 0, 9, 58, 34, 'ce2ba1215c3989db29bbd18b70b89a957ee3ef6724931a02f0d11812abadf750'),
-      (378, 3, 9, 58, 34, '8e6a831e2ac4655c23f10faad7bb41efc241855d0157130771babdf2168e3e3b'),
-      (378, 6, 9, 58, 34, 'ef20dd95316b9a36fb28f1aa7bbec5af4c48e0c04086cc6fc663ca0f2f9f17b2'),
-      (379, 0, 9, 59, 35, 'f2855fe6addd308c361344446a74e8ab7d300c13f2802847de1f943d87066dbb'),
-      (379, 3, 9, 59, 35, '91594cbe5160d1408e18ff80395fd1973a8e04fb449fd5e76e6d84b13c26c239'),
-      (379, 6, 9, 59, 35, '238bcc44e4a01c519d442cd541378692055931b686e9f9f39ec884bf56f4484e'),
-      (380, 0, 9, 60, 36, '46b73e4ed410a8ef7d923b9e97d838c0d3ab34a9578c73195a2603a42f3eddfe'),
-      (380, 3, 9, 60, 36, '454d959e36c2d66dff37e0ee125bf5149d5ec99e7c7a6b5e66cd919ac141a1b2'),
-      (380, 6, 9, 60, 36, '73ebd93d77fc7e5c478244a09fcf20758f1698fab6c7f2c043b123d201da8602'),
-      (381, 0, 9, 61, 37, '58836f681640b9cb9908c4c092ca88ae98528be5722fdbca05496f4b642056a9'),
-      (381, 3, 9, 61, 37, 'a6503d912dc387e9e17b256ac5cab5e4c1cc83478aa78c5fdc85a7d82a0b671d'),
-      (381, 6, 9, 61, 37, 'd4fbafea5dbb2a94c238cdd21ed6390d931961cabef515b494d26431deb94943'),
-      (382, 0, 9, 62, 38, 'e4292486761589b9bf2e0117b1f3d8d1b37e1aa23232ed1bdbc205ea8a8c8568'),
-      (382, 3, 9, 62, 38, 'b8b45d624d11852c0cecbb65a2dd67d0f983f40a41f3cb6446772b14f83a3fc2'),
-      (382, 6, 9, 62, 38, '8f00a058a9cf87f1d85e38f321500dcdc5e4c703ec24b077ca4eef24521ee5e1'),
-      (383, 0, 9, 63, 39, '3fdc5619e34a0124605d6042d9c090883bdc7d7474d5d498e34eb086be1adabe'),
-      (383, 3, 9, 63, 39, 'c1b310b8511007cfe6ea5a61502522efa2f25f071665c2ee7bca8b84086972f0'),
-      (383, 6, 9, 63, 39, 'a7fe2c0b8c42aea06d2be0f225d2d3bf602e544f7f1d3e6efe8c39b39d881df0'),
-      (384, 0, 9, 16, 40, '854d91b38378ab632657e5d9ca58a9635801152516274233485e2fec8e2b495a'),
-      (384, 3, 9, 16, 40, '5accfaece944999a6e50408cbafe2e5e4f62fce297675746a017a082e37d9789'),
-      (384, 6, 9, 16, 40, 'c46ff1baa17dab3754b5c908f610739f857a0874dfbb3883ef674dfc41dc4e16'),
-      (385, 0, 9, 17, 41, '7a0acb97bfec6101e4d13a4d031659da5a66947770cc1e7db13746c789451223'),
-      (385, 3, 9, 17, 41, '4e0300f2ef8cee202a62eaaf6b8d50dd28c7142ba593604b23d934e48dd23d0d'),
-      (385, 6, 9, 17, 41, 'bf6e8464fad2dd74464eb5a64ee9fdcc0271d8a3466981f00056b58982fa0522'),
-      (386, 0, 9, 18, 42, '8a36a5f5289c255e889f0296aff90b3f64fe446e7efa6d696d25b0a975383221'),
-      (386, 3, 9, 18, 42, '358b7d1e4cb9501bc98ab47eaed37e265767577cf64ac26af37065893395106a'),
-      (386, 6, 9, 18, 42, 'e3f84ddd215b822d08a05431be3466ae8eb647b2e8f2153e677b2957a14111d8'),
-      (387, 0, 9, 19, 43, 'b9a728f739687b4df1b4d469d3e89ac5172ff414a10c8bdbff3f1427a0491d66'),
-      (387, 3, 9, 19, 43, 'eacb57c058886447d2a7f8aa1df0db16467c3dda7c18a948309abdf8848a3b66'),
-      (387, 6, 9, 19, 43, '1bbd76e3093eb414d8248d4db061daa78b17b5d4fba68197c0ce16f8bbe0206a'),
-      (388, 0, 9, 20, 44, '48708ca2c6a9c2c233e22f24d79d532bcc0abf04efb97c1f9584f01a91d60226'),
-      (388, 3, 9, 20, 44, 'd8839ff4c6e092f71e364702f81cdfdf3d5c5d43616932959c1955397456b3dc'),
-      (388, 6, 9, 20, 44, '0e05bcf92896d3749aa7739a2c74fa33d031decaffe34c1bfba8ce5af3808fca'),
-      (389, 0, 9, 21, 45, '666288b8426677f15d17b89a6ed42b804b1abfdbc20a071d19f6b626a6915042'),
-      (389, 3, 9, 21, 45, '69b86ecc24abda6ed93009b7584959c69ad0ba748cb6d60b2ce8c38d0b3067f2'),
-      (389, 6, 9, 21, 45, '41b98855fc6a7aa341585318d7a628cacd698280d73454dbeffc6d3725f2778e'),
-      (390, 0, 9, 22, 46, '023b29cb1272dd8bdbd7ad0c94e810963eae76f52e226620ce0f2cb15ee2af96'),
-      (390, 3, 9, 22, 46, '0d480e526cf4eec01b5be1b3cade05b93b4c89ff1ecd3ad6987cc4ca677ab46c'),
-      (390, 6, 9, 22, 46, '9a3f284aa1f5f3ecd4a6e893f02bfbbb801b5501a209366e8471b8eb164e345a'),
-      (391, 0, 9, 23, 47, '4be12806c32f427297e2e77fce908a4ad6f70a227c7d240186f1e9d4952ca568'),
-      (391, 3, 9, 23, 47, '30021c114d8e2a17a0e43ea68e9c5618567c06850e0c681003c51765d7a58553'),
-      (391, 6, 9, 23, 47, 'a9a42387a24bccd094ba1ca3083b0761b1272bbe45308c0374de11273503c2be'),
-      (392, 0, 9, 24, 48, '99bef1c6008b8956dc283dc7cfaa83261db4fb0641a23392f0a20d52ea88df10'),
-      (392, 3, 9, 24, 48, 'c77c50ac59c65c375adf5d040f1005c91ab81f63effd8487f1ceb802f54ca1cb'),
-      (392, 6, 9, 24, 48, 'a529e8c51871daba2ebcd2ce3520bc431bd50a3bf562ae3ccc6a9113056e8d61'),
-      (393, 0, 9, 25, 49, '8c14193b071d97bf0278fc03cee2f1987c79fbe9c7299d494ea4485cfb7bdba8'),
-      (393, 3, 9, 25, 49, '6df9b269d8a230e653bd3b95db4a56518f40f3c6ab4f95d2312c5cd36765d0e8'),
-      (393, 6, 9, 25, 49, 'f20e43b0bad6857764ec93a6dd7b57802e65e3a5c0ff41e6d70fb0278dbb31a3'),
-      (394, 0, 9, 26, 50, '6708a3a3325f5ba022cfe29ba63521cbd7787503b3fbcaf25d9fdaa26796aae0'),
-      (394, 3, 9, 26, 50, 'e27e203c9a5c44f0989a4c5ef083cb10ac75ffc031d29e3fac6fd892abd0d554'),
-      (394, 6, 9, 26, 50, '1cbb739a11527c981c4848a1ee3c1463a1ad075832ab616bcdec59b285e878fd'),
-      (395, 0, 9, 27, 51, '9bde9940d9a90451932ced1657b2267374e7416a77847ab9ff4acb831853e31f'),
-      (395, 3, 9, 27, 51, 'd421af2b7966ab80f52a4d893495a105f47d20cb4aab4502034a14e3e2747d81'),
-      (395, 6, 9, 27, 51, 'b676ccdfc0ec34b1db5e5b6cfc32767c89fea57ab04d94e1835a9305ef28b47c'),
-      (396, 0, 9, 28, 52, '34f0bc3a0298e59304aa8015061eb79929ac4db607cb04cb4f94d9b40446f3e7'),
-      (396, 3, 9, 28, 52, '90b13ecfcdacdafeb2e769ccc6b01412d5fb5ed36766eee93f1bfddeb767a469'),
-      (396, 6, 9, 28, 52, 'b1c14d89cd9f624e6452a608252d13fb1530ed3248ea841b058f0c0338999b29'),
-      (397, 0, 9, 29, 53, '430aaf82302e710d865221d1d33a683b69844552269a4e4352bfddbe49e103f9'),
-      (397, 3, 9, 29, 53, '6c105b210ed581820ab741a5b45b732978dcd048520a0ee646563a6da23f6f6b'),
-      (397, 6, 9, 29, 53, '7fb5d730339ac3a700913d2aa5a58004f97cdd278e24b9fcdb1fc0972e3df639'),
-      (398, 0, 9, 30, 54, '04a33a142bf870e3326a07077655019c2e7c6bec2e3a6a245ce533e1e7044057'),
-      (398, 3, 9, 30, 54, '1de5c714e22f228e9a2338d732823af9ea25899407702f86f5f1ebe35859eae3'),
-      (398, 6, 9, 30, 54, '5b3ef24ad8c99b18bc64313066b26ea16968ca50b564eb8f0056e9244481cafc'),
-      (399, 0, 9, 31, 55, '87c1d22fac0d7eca27cc21e25f3e6c1af5998b8bfb5f2b876dca34cec08f361e'),
-      (399, 3, 9, 31, 55, 'ce3d4dfc97428b1fb9eae7597c0b646fa8223d9fe65f3cd845fc62a4d8132a23'),
-      (399, 6, 9, 31, 55, 'b5602d51f0a3e00b9577a42520f7662c790d86a5307260e37608793cca78fd05'),
-      (400, 0, 9, 32, 16, 'e0a35bc714cd764998c5547014941b146c21408f571da1202f2350fa1c2dd761'),
-      (400, 3, 9, 32, 16, 'b3f5e1ad3af1f073a184445246e248f8a939466e07b957c9c274d49c5547d966'),
-      (400, 6, 9, 32, 16, '7b24fea10e7e3aa739032673de0586e9473dee52f502288c006dc81336f06888'),
-      (401, 0, 9, 33, 17, '5a777ccee7ca0eaf9c9ac97bda5bd9a9f0e528f45e198e6e4341faec69812fc3'),
-      (401, 3, 9, 33, 17, '04dccfb296569aae6a7026a9a71fd2fd97f1504d19152ae8641d4c51ce8b1be7'),
-      (401, 6, 9, 33, 17, '6972a403cc230425a389105b37c86afe6e0d1ae450974fccbf6f1dc5d69cc5f1'),
-      (402, 0, 9, 34, 18, 'ef63944ea095a0106de03b307b6f8a35bf7b1d92894b74ca8589445a9fed2ca2'),
-      (402, 3, 9, 34, 18, 'd22df0be0d4e0031f055b487b90a55381d46e91771ef88e4c0ff907104d7cfcf'),
-      (402, 6, 9, 34, 18, '883c1be846e76e42b40cd1dcd0c67da8fc08b88b67f7dd13723e608d27a85942'),
-      (403, 0, 9, 35, 19, '4ebefba9b3682d9507014ef62122c6e4a65b7394ced5e5141b7c08c5867a2b7c'),
-      (403, 3, 9, 35, 19, 'e2e1bbd3112e48f87f51ba696672891a5b33f6aad625899824e6329000e90474'),
-      (403, 6, 9, 35, 19, '6db346e7c6bd5d7bd3fa607ed0e1bd4e55eee0016382a7f166edbe2b0c388836'),
-      (404, 0, 9, 36, 20, '791b9509a47bf690b323c6b994818254c513f223a6eebac61204fba4dc1ef99d'),
-      (404, 3, 9, 36, 20, 'b81f1a7eb40656dbc7f5fd98422e58ad287844da99d28ed7ac268bf446c72481'),
-      (404, 6, 9, 36, 20, '69c7cf5dda6408124ad93ea4ab62065e1a4e56b839f7d4599beffcaa7796af04'),
-      (405, 0, 9, 37, 21, 'aed4c8d5d8dda50697b48ca4d60b1a4fedb9b36543d79bdd14605fcf67622b5e'),
-      (405, 3, 9, 37, 21, '5de11c2623840d63e0da14176349ec58951d148dd41ae33ce227ba2d63876ba9'),
-      (405, 6, 9, 37, 21, '41985a2a8b1c739da387274481d07e1b6f2e9bdfbae18cb2a3286263b6811f34'),
-      (406, 0, 9, 38, 22, '3c750cc0af217c543b90cee4e4f5ee97b4a483f50be59c21679a131a1e1c8de6'),
-      (406, 3, 9, 38, 22, '74b7add77748ce6e46e78ff873d83b53c51b60853bec96bdcf7946a1c80e2ce2'),
-      (406, 6, 9, 38, 22, '687f60830079bc7f6e640a1fe29d101942d7db1e9a52cec68a0ac40c53b89f8d'),
-      (407, 0, 9, 39, 23, '19153ce751821b62c8a35ca56bcd8bf49c993bde45218ca4ff14b1cb9de81b23'),
-      (407, 3, 9, 39, 23, 'd7919b318a30200d205d44b09f2447520bdd56210eb545bcd8bd53cf20d08d3d'),
-      (407, 6, 9, 39, 23, '2bebc852a265e0667cb9a95891ac4b0729702883f91abf9aaf166141a6eae0e5'),
-      (408, 0, 9, 40, 24, '522540d1918e63655ddc7c31c0b50e2deae3a2a0f0bad46caa9cf7c4dd9bb401'),
-      (408, 3, 9, 40, 24, '8fc6ebffcd2a8471dcc8b6da71e86facd7b6bd5a23d3a94a84fd89a0d58ae831'),
-      (408, 6, 9, 40, 24, 'e6b7103c3b9faea4bc0668b8e55a7a0034657d1ebd3a03b32207809951f9919b'),
-      (409, 0, 9, 41, 25, 'a8ac162a314b1fd01d0ab17eadd28a754453fa75242c5e465d744796b80160f1'),
-      (409, 3, 9, 41, 25, '6ccc1d5cba939ec970b681e52be3ec84cd2eef3069dcb4d8e72a482394fb983e'),
-      (409, 6, 9, 41, 25, '07765646b12e946d819353baaa561d12d69cd7f6823d805c4ed5eab2f5adc164'),
-      (410, 0, 9, 42, 26, 'd040bf1de52d1cb6f6d1f8a29cafedebc406fc95b445ac531c3b974de0a88788'),
-      (410, 3, 9, 42, 26, 'add81168dd14ad71dd31c37ea77fa533923f0b7f8a5a9b6e9a4e61fb265c2645'),
-      (410, 6, 9, 42, 26, 'dc7f792b624570e247166c83fb47d79e1fec11062df267ec5c71789e938eedc8'),
-      (411, 0, 9, 43, 27, 'e2418355c1de8fdb648543164090ca69657a47181ec0db4a8bef69e894194a98'),
-      (411, 3, 9, 43, 27, '75a27622efd5edf20f1229e7cbe4584549e65ec16bb5d0da0863c5826870ea96'),
-      (411, 6, 9, 43, 27, 'e8a76663393d598440903ec937be71f090c5a11fa3e14ef30f6e48d121e765ca'),
-      (412, 0, 9, 44, 28, 'cff4bf516f9ad7b66a09551f5d0f34e6831e385b9f17ee7f48ee9c055dcd9e5d'),
-      (412, 3, 9, 44, 28, '628d86d609e7701ea9ab945b62ee9bc58ac1d800ba2532f143d92f4ca4b0e9ff'),
-      (412, 6, 9, 44, 28, 'b33bd1ed4596bc9c33c107a5b3c531aa2403de0e3e2c3a4caafc90eff10707c3'),
-      (413, 0, 9, 45, 29, '5605688f135e182aad3ba733521b5d6c6ba27193be83a3a42284b4266d63b704'),
-      (413, 3, 9, 45, 29, 'e3d709d932c6aac677bef17cbf0367c0f77fdd44072d5c4d91601301e4846e47'),
-      (413, 6, 9, 45, 29, 'f6f348d9418867696e85e11035d02470eb54570d55765fc1f3f109a026740567'),
-      (414, 0, 9, 46, 30, '08bd66738d33dba5721ed09f0f75233bd8aa9b77c2d09539cc5ca49075d855c1'),
-      (414, 3, 9, 46, 30, '965a33c5b55db31247859252a0f5be5a676e987c9a7ecddc556a809e3c6f205f'),
-      (414, 6, 9, 46, 30, '58c9bc88f0050bd085ed5b1e2ee3b891816a3735ae3a56365f07b079f77d2d83'),
-      (415, 0, 9, 47, 31, '5ebb0e0ad2d731542a75389e04758f8e5eea5d6485d3e84c835bb5d961118c66'),
-      (415, 3, 9, 47, 31, '50d3c55775ec794da63a89ffd6487371d1275827540323e97a4bf5a5d8cce133'),
-      (415, 6, 9, 47, 31, 'a302f423964e198a9cbf25dcc5bddb4df3aaf13fc586efb2d333fa26bcebbf36'),
-      (416, 0, 9, 48, 32, '66b0078eecbd6b5e7fc8668228fd0cffa9523ad0c8046719375113e859a60795'),
-      (416, 3, 9, 48, 32, 'b855c1c97f01a835d1c864e1fd5c72e5ccaa4ca9c55ed46c00bd3c44b1f1264f'),
-      (416, 6, 9, 48, 32, 'ca72c7bc78d2dd2eaa73cbab85d742e245c25ed73d80c4e5c7a2d7d2cb89287b'),
-      (417, 0, 9, 49, 33, 'ac32082281603e511ab07a0458d5aa7d7a2f770560e9136647e40df6a140852b'),
-      (417, 3, 9, 49, 33, '959d0ac47b91e2b3d12fb0649849ea87e139c882922664c616b9ae0b45072ffc'),
-      (417, 6, 9, 49, 33, '4c8745f598ae6e2af551c49ddc9c5799f762d505a2b7527303b309150ece87a5'),
-      (418, 0, 9, 50, 34, '17e9fa05bc58beee4e5ad48ec9587587c47fe8bd9e7807897454e6bcb555f460'),
-      (418, 3, 9, 50, 34, '267ecc087aa1e9063387f712507ea38c0e2b6979487cda1549cbe6807d4dc5ac'),
-      (418, 6, 9, 50, 34, '43353835be308681d221cf36fab8ab621ebf2ac16ba6d2d163aaaf80320b5dd7'),
-      (419, 0, 9, 51, 35, '307b0e38049a2ec51137149e77704847bdc01e81d1753fc72b6a160994d3b371'),
-      (419, 3, 9, 51, 35, 'f133f12f0f73e0b76d931e6e784d43570d4ec767841cb6c4ed810423a29d1484'),
-      (419, 6, 9, 51, 35, 'a89fb4c595ab26c63245d449bda0eb0ac77d79ae3bd91214ac29c7dc59905716'),
-      (420, 0, 9, 52, 36, '3ecdaafc7b11602f51bb4de491141d5430ac621e41b3a00ddbb4cbafa0da9808'),
-      (420, 3, 9, 52, 36, '40a10e2ba6c3eed83aae12780ecab12ddf7f3aa41186cc8a59b61809cb8290b6'),
-      (420, 6, 9, 52, 36, '2f1da7dfa5975422c8b35170215b50a7e683f60bb1370aa12d172daf6486b559'),
-      (421, 0, 9, 53, 37, 'dcb9052f06506f5c398d6b49385d225956e94df4913338a3422cf05556618d25'),
-      (421, 3, 9, 53, 37, '9a7fe91317f93000af10f020ae3bc033374af4ba2eb0e514c08bd2cc4512cb6f'),
-      (421, 6, 9, 53, 37, 'f751d8b65852b28bf2075de2c4c48f2f459ac28345e09d88e908a2b9230cdd35'),
-      (422, 0, 9, 54, 38, 'ad94272f6eb009d19d66b0cc7e6cefcc2e2c2724b14b4a516c843d4117f5c43d'),
-      (422, 3, 9, 54, 38, '5a3950e5b083d35231657f506cf47fe51d18e4990d95f5808346b83cf07423c3'),
-      (422, 6, 9, 54, 38, '32e88872f4a11cd8378db957e76a372f9a0d40fd88f29ea05312e00acb9e8ad0'),
-      (423, 0, 9, 55, 39, 'f2a5f3ee2763ecdd2814bc00b08d032020b5515c37bce3139b98fcc101e82a9d'),
-      (423, 3, 9, 55, 39, 'd38d4178f28e0eb05df863bacb1a2e9d6242b02a19c747a0768db83eedb88613'),
-      (423, 6, 9, 55, 39, '20a696b6a22e16d861d00f3d1331677a2591eb00fa287ac02c6f0c11d93a60e2'),
-      (424, 0, 9, 56, 40, '8c8aced0b731647c9400bb35bf02cdf81420bbabdfbb31495fbe6f6ebfda79b5'),
-      (424, 3, 9, 56, 40, 'db658a773351228926445ef11f9a6a595a2730409ab618b8c4d6b93e5e9b9cbf'),
-      (424, 6, 9, 56, 40, '4ddf345dd6721c5ca1d1e055f3b619e44059152e3fc15febc3b3336bfe44b47a'),
-      (425, 0, 9, 57, 41, 'f71ec99c8bfaccee75c8993f4935d66d8aa3fda12fd622609483e986ef4b1c54'),
-      (425, 3, 9, 57, 41, 'dc8b8ff63f3b281a39bd6b58cd34b2df1f821a3f511b30f2463b98a2b8295617'),
-      (425, 6, 9, 57, 41, 'c2b777ef570f0392284d044e0ba6ff5c63a4e62319ed115e7664bc09957f9b75'),
-      (426, 0, 9, 58, 42, '6a4f990596843148edde8cd776f36d83bb7b0daa66eeb64d2ddff07db968138a'),
-      (426, 3, 9, 58, 42, '95c087e32829c648e7f0b2c82f6f6f265851bb48503ca7d3ff30a69a8ed72f4c'),
-      (426, 6, 9, 58, 42, '88a5ad0abcea2dc2418ffd5fadc5f4182c5909d9a0b95aa10e0da4db8439a2db'),
-      (427, 0, 9, 59, 43, '33af2c4dbfb0dffa8a3cacfba0259a1a78299faf6420a85bea7cf632b2660d59'),
-      (427, 3, 9, 59, 43, '82c5b98e7a840bd25419f27d4bf90b2009f70a5ba041e4f3b17be4f24846bd83'),
-      (427, 6, 9, 59, 43, 'eeaeccab963a418f5bb45de305aadd2d526c7baae8fcc3e2891010366ca2883b'),
-      (428, 0, 9, 60, 44, 'bc8611c98ab49006cd9a23e6dd5b2749d17fbca39b9b477a7828dedf8d8ecf8b'),
-      (428, 3, 9, 60, 44, 'd8765be2559b9b2af8c2ed006115725bbcd7ed35a82edb2ac0b72cae0a3d78d5'),
-      (428, 6, 9, 60, 44, '4c9c819d9b2be6c0434fd75c6ab6a18c8cbd34d588a890612f71ff9702520cb7'),
-      (429, 0, 9, 61, 45, '61054aabd9255b0b9e27e4b83e1d5840a7b87808595d464018f979c84402c44a'),
-      (429, 3, 9, 61, 45, '471d43e52600250f00715113d1b97e3c307bdd32782367fc1e8026f006864abe'),
-      (429, 6, 9, 61, 45, '2ece890f7de260b754c106b54b6e87cc634cd9c37da24858cf6941db4b429f0e'),
-      (430, 0, 9, 62, 46, 'c7519e480a7d27602bc8a47be1e744a41996da7761219de3beb3694b082fec52'),
-      (430, 3, 9, 62, 46, '373accb0427566340a08ca19b06faca4e91faf96c63e77391011cf01785960e5'),
-      (430, 6, 9, 62, 46, 'd95c0525c28036be6cc19be05066fdaff6f795026922cd6c8764b4add7cae725'),
-      (431, 0, 9, 63, 47, 'd4e8200a4db7d40dcf0c1eebf8c152fa51f4099a2e052d820abf1fc3268b5e99'),
-      (431, 3, 9, 63, 47, '21727486ddaa5e3bcdeaada0c9a7810ca53a8d0cfef494890deb8936cb39a98b'),
-      (431, 6, 9, 63, 47, '0b4ae64c9a88e203ae28672c71256ce071afbddfea54de8a04b7958f5e5a64fd'),
-      (432, 0, 9, 16, 48, 'b21da1aca2129bed84b0ec8a134a3dba9ba8b9589b6cb544ae3d9d4a0389ec4d'),
-      (432, 3, 9, 16, 48, '077687d07b4dc4c8e8db116614ec65e45f5b804e9d8b8c2125f43a6d84cd7578'),
-      (432, 6, 9, 16, 48, 'd5ec8cd2d9a9ca4f817ce2575a5c5ceddb108f8f4deca17448cbe35f3b7bdd6e'),
-      (433, 0, 9, 17, 49, '37a6611d3c442b9db098a22007489cecc37ebe7baa3ca8b9406fff07641203c4'),
-      (433, 3, 9, 17, 49, 'dc1a953491ceffc5bfeba4b250cf335e61f9e5acf7ccec9c698602c495d1502d'),
-      (433, 6, 9, 17, 49, '122fca39f532622a85d8be67ce04a1541935961016ea4dc0b1fe62842461075e'),
-      (434, 0, 9, 18, 50, 'd595933d355772bcbc76c45b679e15331b1f5ed90a9eeb82b92990ad32755048'),
-      (434, 3, 9, 18, 50, '24963d4262d76b41496246efb25c5a7c4b7b2b13977e6b21ed03a457810276a5'),
-      (434, 6, 9, 18, 50, '4571302b6bd8b71e6c95a9ed6ab6c10e82eba9b88d25da6eca71c25da893860d'),
-      (435, 0, 9, 19, 51, '4e636533f79064df91abb12229aef36d9185d62136b6c7a07d0dd31b397a41ca'),
-      (435, 3, 9, 19, 51, '009c6aa586bb3cec1f6f87a60d210883030a6dd8d657d97a3fb3df655de80057'),
-      (435, 6, 9, 19, 51, '33dccc836838f6172592eda9ac151de28822e4ab8219ce25a45da295e19a79fa'),
-      (436, 0, 9, 20, 52, '621408443c9bbb93e7b4eb2fa059639a780def34fbcb888ad5365270beae7c64'),
-      (436, 3, 9, 20, 52, 'b30cb805c1b361b6c11cec409be889fb5fab543cf9c1f5089cf3b30defbc7d7d'),
-      (436, 6, 9, 20, 52, 'f7eefc6d1c9314697a88302c6c34cb3cae948b31aef54711a83b2e341e919408'),
-      (437, 0, 9, 21, 53, '61d895a98916d5ce627142b88f59e75e70cfac8c55f56553d51978c7460514eb'),
-      (437, 3, 9, 21, 53, '8c2548342b033bfc92cec5920c0f056d5cb3eb760d9c9593176c3ea65ed3de7d'),
-      (437, 6, 9, 21, 53, '5137168b2ba622130779c3e43bc9fe796048563720fcbb73ab84c18d3b5681b0'),
-      (438, 0, 9, 22, 54, '3071e8f3433f85d501a9ae93ec0658b3243fea03a46b1f34b311be6d5342da11'),
-      (438, 3, 9, 22, 54, '5083fe8d9f33bc77ecc094fdfa9ac43e074d0aa15fc49aa788e73c7076c393bd'),
-      (438, 6, 9, 22, 54, '6701de08fefdda487bb3ee82d3583acdbfc6cb74614af879e3edaeb3f093de7d'),
-      (439, 0, 9, 23, 55, '0d8c9ed72e345c80a138e07972bd9184f6745926fbd6c0406145866ce1f3d034'),
-      (439, 3, 9, 23, 55, 'cdd7f8ec2475bec5d54931c7f3ec6419ab67cd27f6a0bcf4e1b0c2e1b380cf43'),
-      (439, 6, 9, 23, 55, 'af522f6271683b4a82bee1f522b1f66c93f5a54a99b0e4561a4bd9f89a76f8ff'),
-      (440, 0, 9, 24, 16, 'dd2ae60374932ea8924ec2f0bb4f05938d58b859f9e7994dfdd99a2cb89818c6'),
-      (440, 3, 9, 24, 16, '5f0d21451e73767d53b53db833b0d773ce5b9ad1d12320127e2b3f716ab7e80d'),
-      (440, 6, 9, 24, 16, '7f376e63689b213474d3e5bbddbeb23fef096086fe16eda441bea0d418425d72'),
-      (441, 0, 9, 25, 17, 'e621cc59a48049d835c0d191dd79706998ba7d0330cedf79c9f05ea6c664c663'),
-      (441, 3, 9, 25, 17, 'a12b00dade1534de3af7ac679b8534956443226ac267bba4a5466dda3a72ca22'),
-      (441, 6, 9, 25, 17, 'd95191683df1eea8e2a5773e04ae0a0fe5dc360c4bad52699d348e24d415de65'),
-      (442, 0, 9, 26, 18, '16c4c65dfc1982edbbb9dd4e22db3e5418dc979c396d266f70547cf6433fd4ab'),
-      (442, 3, 9, 26, 18, '61ba96cc68733ba7916c68dbe61df1e4acd3c0682e4609dbb25dd9c30e60ecee'),
-      (442, 6, 9, 26, 18, '14fb5b6f8d3a07d3297dd5d5e785a1bcf8ebfb34c3abb4cbec7c02811a9b3d58'),
-      (443, 0, 9, 27, 19, '8a6a6fce27594cadf91a619bfe15861f272f58b3660094efd585d11871f5ff5d'),
-      (443, 3, 9, 27, 19, '4fa2294d4e9a23b6d773131bea5ef3856c32281f9aef5d0d93bb1afb2f1956fa'),
-      (443, 6, 9, 27, 19, '062299a64181a10f419fa1954dc7a17fc71e5473e6f289753cf9a70abda0263e'),
-      (444, 0, 9, 28, 20, '626169b423c576383e13f62339e2918cec0751bc3cb79cc2cd744c871547664d'),
-      (444, 3, 9, 28, 20, '341db0a065d9509df83ee13b211d94b99f2377cef0403b0a6d472f5a9b3accaf'),
-      (444, 6, 9, 28, 20, '9efdb30496a04f8a86bf9b4583fd4a7463917614bfa3bd2e84c0ac1b277d63ee'),
-      (445, 0, 9, 29, 21, '0fdae589dcea0cd7fcbd5689729b92d9a1313c447c0425d0bc99d44ed412c47f'),
-      (445, 3, 9, 29, 21, '1185fc2df63ff37db9f26f69c68e1b72480cb864ec6ce94d26d9242c433f701e'),
-      (445, 6, 9, 29, 21, '6e4e61995703db009498044f81c460e1c3b107f76f06988408da351363c949ea'),
-      (446, 0, 9, 30, 22, 'ee3f02a6f9c59309388ebfee97e6282976b09596e64d84d132f1106c5ec09c35'),
-      (446, 3, 9, 30, 22, '0451a510b7d38bb2321818fb784bf6992fd5396063fdf85e427a456e240b10c0'),
-      (446, 6, 9, 30, 22, '1a69085b9f9ce3d5da5afc2dfc6ca966c53178b933d813d871b0e2f52ca75429'),
-      (447, 0, 9, 31, 23, 'e80d78aea5531da0c019ec4df0623eca63ab967775920c6d74c6957bb022d665'),
-      (447, 3, 9, 31, 23, '8e5a21a86c737bc8611cd693b704dc1fe0c59ee09dd97f3a663e9b0dd25de3b2'),
-      (447, 6, 9, 31, 23, '9a20c3ed5964c21c954c216d4b0a5a0a93da6dd69a2b2b54116c7fbdcedf5f70'),
-      (448, 0, 9, 32, 24, '4b80a9c0ceee833912b21d4521cc39f87e8144c96820a8fb3e4292aaef493d4f'),
-      (448, 3, 9, 32, 24, '3f06046ea8814b41b78146604572b3d2922adf2e593e640b2b97de57731d8e9a'),
-      (448, 6, 9, 32, 24, 'de2a7585d90de23253bfe5d05487195414fbc983745ce6e17da79437d6747860'),
-      (449, 0, 9, 33, 25, '3c5d031fd21f877123a6df8b6376833ca121582b92fd72e87a9481e022cbad12'),
-      (449, 3, 9, 33, 25, 'e85f4c93d087c209071932847fe835cd9e241776bba1dfb5a3bb7d67512ea4b7'),
-      (449, 6, 9, 33, 25, '4edca250ffe50c29d42f3a7e6dfb9df07d6a7a094ccec7017c8b05ce7cfd13b4'),
-      (450, 0, 9, 34, 26, '85124242095bb59169c700737247fb8171c8bfe27eb164b887fc3e92ab394c37'),
-      (450, 3, 9, 34, 26, '7acf5f8c6c04f4b7c1b301b59ffa48859a7e12487c2e33d3dc27b0756aabff66'),
-      (450, 6, 9, 34, 26, 'ecd9fd9824f63e056dfcfd1883ce823f87780bf5999dbe0720a2b918798e7fd1'),
-      (451, 0, 9, 35, 27, '552a613adad24ac973cd2504dd66cf7e9f0b26ae70eefdf865ba1175a12c6c8d'),
-      (451, 3, 9, 35, 27, 'c59a6f883797b584f37f3519d8cd7691dccca9eb0fe9e0ec9d2624315d9d66f6'),
-      (451, 6, 9, 35, 27, 'c7d28745c8e903ffb36c31ad3f2bbb88e147e4ddc8837df1f255df9d715c1d0c'),
-      (452, 0, 9, 36, 28, '5462828950e74d275bc9671ea8f7ed024468b7f498482a89afb2fae804fa3f99'),
-      (452, 3, 9, 36, 28, '19688b23ccdd250bc3f0d37d816d1f1891bd56b4b2a9c34d75810f664ae5fa66'),
-      (452, 6, 9, 36, 28, 'cca658cdb04b87855ee09857cc4169fd42e2ee6d902df4785873a4224d21cc7e'),
-      (453, 0, 9, 37, 29, '1e14408c7aa9c74a31801aea7c756a628c0a9f1a2bc545acbd952b10b6649692'),
-      (453, 3, 9, 37, 29, '1efebe8ef8ecee8c99cb7fc61d961fdbadbdebd33872d4083cb9f855bee64425'),
-      (453, 6, 9, 37, 29, '52197e8ae9ea8770a8008348266bd331b3d71bc7aadac8984d424a20a2da61d3'),
-      (454, 0, 9, 38, 30, '0f68c88ba384c722e4e442e7dcf600efbf669439ea5dcd93e62f3965b427f77d'),
-      (454, 3, 9, 38, 30, 'ca8069856120fd53ab93928060b945524e6a2a5380b511ceefa897a6f33ba162'),
-      (454, 6, 9, 38, 30, '798b9e87acacb59ea8fac99da9e3101e97ed9ffffb058a9ce8102c69765fd374'),
-      (455, 0, 9, 39, 31, 'e220d17fa2eab6206d38d02af5f2667b4d8a2560cc8ce973f18b2c8b3fc6595d'),
-      (455, 3, 9, 39, 31, 'aca121d8d3d360d0df00fe6f566766272cf00dbf3cd397e94dc58f58901ae0c0'),
-      (455, 6, 9, 39, 31, '5bd7551316acc9aeaf8ff2936cebfdf55f9c1c3ea1723a069a545d55449296eb'),
-      (456, 0, 9, 40, 32, '58b3806c7133d5626ebb9fbc6797002adcf7dcd4cea3d8fefc2ff8e70aaf9a46'),
-      (456, 3, 9, 40, 32, '43de8ca267748e64fd88511ae0239677af6408a42da245f710c7722cf2d51137'),
-      (456, 6, 9, 40, 32, '8b9b84420cc21af1a29c8efe4c70618b27dacdbec017931ff9b2c74990d1c6a1'),
-      (457, 0, 9, 41, 33, 'f41b5fda2e38e769808004fb7d35cd79dd0e904b5f9daad84afbed617ed25592'),
-      (457, 3, 9, 41, 33, '912be506f5c47b99a2275d04ac7c2702b9cc13db0acf1bb4a992312ac405160d'),
-      (457, 6, 9, 41, 33, '591e676784fc3f45e00600f7214c82da9d815bd10bc276aeb4b1785ec8b175d2'),
-      (458, 0, 9, 42, 34, '94e722b59f5a59f159d1a9f9f13be9ce8e4d2aa88ab01363443f8b197baae1ca'),
-      (458, 3, 9, 42, 34, 'ada5104fe470f805dd4cbd274fe14c4125c4417f1608e530fd792d6efb93a5b3'),
-      (458, 6, 9, 42, 34, '2d15ef93d716360a174860693ffc1c571687e21ff224013eeeabbe43929e970a'),
-      (459, 0, 9, 43, 35, '7df74d6bf2913999b1b2a62f7cbab368648921dd9fee750c3a2ff281f88a737d'),
-      (459, 3, 9, 43, 35, 'c360dcabcf27c605aef06a2bf72cab243d8b34ff49b7642f5435d688a714bd54'),
-      (459, 6, 9, 43, 35, 'caac45c6a0f38b8e9feee5c46746b6fb6be11ec38a812526d4e20476c2601e70'),
-      (460, 0, 9, 44, 36, 'cf6da6dadd9610dd8191a042525f891d2b9599412910be27718770d7d158d675'),
-      (460, 3, 9, 44, 36, '770dd214e58abc2dfdcd419d8435553503e32c955073500fccc45b3d7d40568e'),
-      (460, 6, 9, 44, 36, '2ffa3d8a07bc6bbb3a69c7ceb53074f369ff092592eacfe81b08b14ae2de874e'),
-      (461, 0, 9, 45, 37, '384cb527946795d42cccaadae3dbd3cd8525962230245d946272ba2340a03a06'),
-      (461, 3, 9, 45, 37, '2774c5c3cf070bbe6239704b3c90773ffae86479398cd27544a8181f447b9e1b'),
-      (461, 6, 9, 45, 37, '95d997b3351558cc193d18c927bc6a467ea7d2832c86acceb3809218a99a0609'),
-      (462, 0, 9, 46, 38, '9c7dec88e7f5c4746280fa1a1a379bc125fb7cea3092027573c225ecf9c7a9b1'),
-      (462, 3, 9, 46, 38, '047a30acea1a8db63208a04f57e7194fe1fe5170448f9dbff8e0e1405e1a6fe0'),
-      (462, 6, 9, 46, 38, '29750ce1ec51189d8bf521f696ee6d9668e02a1ad6f58f0fbcf3ef07f61654ed'),
-      (463, 0, 9, 47, 39, '3b15ef06ed77133748ddc5adc0839a9b0349387b04472f8581bbbdd5df64fde3'),
-      (463, 3, 9, 47, 39, 'f46b32c863e17513ed59e0a9bd46fae42b13866e1da1c819598e827f3ec952be'),
-      (463, 6, 9, 47, 39, 'ac41f4fd421de9fd7454c338f4cd607cc33a398986fa0edf1a860fd91183a85b'),
-      (464, 0, 9, 48, 40, 'c6b0f63595d4420ab74a0f57c107025e6c228277045146e681b26a6306f5a62c'),
-      (464, 3, 9, 48, 40, 'd8d6ceced767f38c51d71489967757a346097d7558fcbf1943bcae9bcf0ca4b8'),
-      (464, 6, 9, 48, 40, '8beb88385bd1ee0a0f2606304c3035661a63e2864c6528540b28176770ed5356'),
-      (465, 0, 9, 49, 41, '5c8dc49bbb8fc7b263c79a23e7ff725c0abaf138aff748792bd76403422bcd48'),
-      (465, 3, 9, 49, 41, '9026ea4a9f0c2b05420f936be07184478a03ef4fed39e6602727aac57a5beac7'),
-      (465, 6, 9, 49, 41, '372df08777358c6c863e0e543065d7c85b0e96683b4aa93f880c70da34e4ec1c'),
-      (466, 0, 9, 50, 42, '6b834f04cc5fbc0361c75261c63e00f81fae41275e1dc9c46f0394b25cf4c10b'),
-      (466, 3, 9, 50, 42, 'ad58328e596e6bb3546d48c917b0978ea99d2957f114bed9367c95bfe246ed81'),
-      (466, 6, 9, 50, 42, '115102301828fa7e25bbf2e92a56c308e22e2c41bcb674e65809ea9a832e0eeb'),
-      (467, 0, 9, 51, 43, '564bfbaa5c00876c064c0b31b9ccec1d8082c65cef2cfa20d1d8dee57cf1b205'),
-      (467, 3, 9, 51, 43, 'd7e1d342c60985e7edba445f4937280f5d5c5310c3db042ec644ce554b8a0d32'),
-      (467, 6, 9, 51, 43, '3e00a60e13311b6f403c79f04dc9294dff6c0652cb125bca5930eb95beffae95'),
-      (468, 0, 9, 52, 44, '9d6a3b67a87354064a75cb916b1ef04a5996f8ec0c69810f1c2ac42caa7d9db9'),
-      (468, 3, 9, 52, 44, '2751f0ce6f2261957cde6ffa18247ead464011b6c497bcd0e74a73b59ee13492'),
-      (468, 6, 9, 52, 44, '2616581d8eb9c724e8b9f8160e4d7b8179a452e0339d226aa43f34ae1c2b8760'),
-      (469, 0, 9, 53, 45, '6d5f73e86cf42990296d8afc083dc7b06dc6c34b36341410901c2479c61fb6ed'),
-      (469, 3, 9, 53, 45, 'a16842a2f0d3cc06771d0f80dc78da40b73d8b396ecc7d3f208999b5c99fdeba'),
-      (469, 6, 9, 53, 45, '27362542baa014308ec8d1b92e8a473cd68308933c39fab8edab587a5fe6df47'),
-      (470, 0, 9, 54, 46, '000649c18eb0dbbeb65bfc75859734937592c0cafa70ae93773487d4b41d0f6e'),
-      (470, 3, 9, 54, 46, '8fe265d76af9b9873fb18ac9c93d6bbe0983e1827b82d7fea782fce26ea59829'),
-      (470, 6, 9, 54, 46, '9c135f3270a390f0cb78ecebbb504cb1a4c11d9d3bdcc024280023ddb574cdcb'),
-      (471, 0, 9, 55, 47, '48bf9e055aa1838f2125b557fbcd8ae06f6beda7ef1ff1a57b3a74705ec87ffe'),
-      (471, 3, 9, 55, 47, '47a909d9cb69dff56e45cc72818149719881ff98a134a1e9d25d31e7afd83342'),
-      (471, 6, 9, 55, 47, '435092954e82cc9317dd02722d5d7b6602bd7848fd72364099a845b8fcf9d7cf'),
-      (472, 0, 9, 56, 48, '9ca7678e5dd78e555c1da2b3e42f3933e7650a412f378e47a84560c5ddeb5183'),
-      (472, 3, 9, 56, 48, '2d840dbe32d6b6c4a088ef8fb9dbc01907dfc34368383a3f9a6100474fb1e744'),
-      (472, 6, 9, 56, 48, '2499a30ae6d7d85f01d6793e11f5eadbd28058d2104a2e40b4231034863db45d'),
-      (473, 0, 9, 57, 49, '4afa6e943bf8b5a3f8ea5622000cc4f6c41564bf3a940dc0e5309fda0b44957b'),
-      (473, 3, 9, 57, 49, '2b9817fdd216efee5cda37cbc1ba197fba868725fb902ddd5dcd7ded7739bc7f'),
-      (473, 6, 9, 57, 49, 'dfe47642dd6160d7eed10498d5b1791be90947419e86a1e0f57552c575ce53ef'),
-      (474, 0, 9, 58, 50, 'bda264baa7126ad97cff34cfa2d6e1bdadc293c9b92113ee5d89378e2bc30533'),
-      (474, 3, 9, 58, 50, '3fb1a678a71eae2f46786a20bf4f991e15e295a458cee236806cd74bfb2b5969'),
-      (474, 6, 9, 58, 50, '590f8a222e555a8fdb8122992b06d4523c2fd7b13ef8320d02c2a7491b710081'),
-      (475, 0, 9, 59, 51, 'ff3849a090d5c46f90603f23295a43184e0d3fa5e57c397a4e2f79cf965c10ed'),
-      (475, 3, 9, 59, 51, '408b8337a05b27c80a7669636a55be5f03be46ab37d3afaf96f9e1e6f1be2799'),
-      (475, 6, 9, 59, 51, '5257144d7e3c51927b4d4294842d2464cc84fd3add87eeca3fa4433ad3aea65a'),
-      (476, 0, 9, 60, 52, 'dd06e20d2943d3e3b6d66f610f3920dad9f3c991bcab3378f9b831b5130a9b88'),
-      (476, 3, 9, 60, 52, '7b40287fdfeede9c714617830b9669a367b1d1dc4aaedcdd9b093d6f0485ddfd'),
-      (476, 6, 9, 60, 52, '99272dd3f81970d37bcf513798b185e8814bf7aaa85d424e141763c0d56b9308'),
-      (477, 0, 9, 61, 53, '5391a84161c686442b855de69fbfad4e3fa6d73c35c7ef6643d341326bb2fab7'),
-      (477, 3, 9, 61, 53, 'cc7b054b32594152e84678c3888af62977e5069b371fa32e70a744f268cbbb0a'),
-      (477, 6, 9, 61, 53, 'f841c03bf5f4bde1a1ea1eb8590296cc0f351d50429a9b53ece3846f572d4028'),
-      (478, 0, 9, 62, 54, '6b9daf4919308f779c4bc609711d2c16497ef3df03e097a07bcc76e66cf79710'),
-      (478, 3, 9, 62, 54, '3ecd6be68fcf2c8dc46c2f37816e9dccde8e3bcf02b0ad33b09087dc965ce5c8'),
-      (478, 6, 9, 62, 54, '5fa37f9dd8420d484b6ffab0b92a44d2dd09a5c31777825a81a3aa7c0bc75567'),
-      (479, 0, 9, 63, 55, 'f90316a1360afe18f1f9eb35a8da6e8009f734170088514d9e526c20e2ba1ea4'),
-      (479, 3, 9, 63, 55, '61e51e3e80f16da1e5c724137aa52a7b983c721dd1d9f4fb502aadf956b1d338'),
-      (479, 6, 9, 63, 55, '54dd1a09088fa043c42f23d8a71af4b984e6e3f6c73a1250a36c52113303096f'),
-      (480, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (480, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (480, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (481, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (481, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (481, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (482, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (482, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (482, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (483, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (483, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (483, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (484, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (484, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (484, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (485, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (485, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (485, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (486, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (486, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (486, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (487, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (487, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (487, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (488, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (488, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (488, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (489, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (489, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (489, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (490, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (490, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (490, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (491, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (491, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (491, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (492, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (492, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (492, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (493, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (493, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (493, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (494, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (494, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (494, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (495, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (495, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (495, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (496, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (496, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (496, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (497, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (497, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (497, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (498, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (498, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (498, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (499, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (499, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (499, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-    ],
-    149174: [
-      (0, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (0, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (0, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (1, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (1, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (1, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (2, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (2, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (2, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (3, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (3, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (3, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (4, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (4, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (4, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (5, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (5, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (5, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (6, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (6, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (6, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (7, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (7, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (7, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (8, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (8, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (8, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (9, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (9, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (9, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (10, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (10, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (10, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (11, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (11, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (11, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (12, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (12, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (12, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (13, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (13, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (13, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (14, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (14, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (14, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (15, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (15, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (15, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (16, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (16, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (16, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (17, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (17, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (17, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (18, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (18, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (18, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (19, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (19, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (19, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-      (20, 0, 9, 36, 36, '8e2267d9d5b3887b3155ac1c3ea2f23f34ef2072b48e7ea2a0e2d826699767e1'),
-      (20, 3, 9, 36, 36, '432f1b390e55ce9e52fde23ef3fac4deb7394d7746e84bb34b7a7fb14b40ae80'),
-      (20, 6, 9, 36, 36, '39b419cf935494540e712c2622589962f429f793305e8f1e9b6cc92a28b89701'),
-      (21, 0, 9, 37, 37, 'bef64838d49ccada5c0b459946c321cd91b0d897895270bab0e69bfe0a1c4186'),
-      (21, 3, 9, 37, 37, '241c1b8b05fbfa04d04ca702ef9491ba58d0f3b4dff52734abe5ef94cd9b9636'),
-      (21, 6, 9, 37, 37, '09fba7228703b4160dd29da3ce6a4715ff93a9c0003b670d550cb73baf034701'),
-      (22, 0, 9, 38, 38, '932db3e008ec4488ce17287f81170a7862796c650dc271cae7b0f70261dfa27d'),
-      (22, 3, 9, 38, 38, '33740f21df6eac2624d9e188ca5356ef20cee44befb496fbbb2ff0a3fe28e0aa'),
-      (22, 6, 9, 38, 38, 'cf86939424e249d6d07439c7fb5c996d689ae057b644d93c8b51dc59058774ff'),
-      (23, 0, 9, 39, 39, 'c2ce2172256dcee2e4c13d86684c37b9d633ea43599b80ee81d4a6019ffd5e80'),
-      (23, 3, 9, 39, 39, 'cba1c95fc94d5f06eb313e51bcdc6b9ab1548bf551d41b2480332795de8d2adb'),
-      (23, 6, 9, 39, 39, '7985683d280f5b4a6bb910f562537a093498bc76a447c0370dabcc5d8e3dfa3c'),
-      (24, 0, 9, 40, 40, 'ff657e41afc635ff08e0a4abab525368043258df941e1d2ed25b482b096e7824'),
-      (24, 3, 9, 40, 40, '761c108367f657b8089192b9a22176fd36d287c590d6a8b437880243809e0d90'),
-      (24, 6, 9, 40, 40, '7bd196b5358ead0a4538348c04a26344c35fadc8c083a6f86ac6d6c0a4ab8c3e'),
-      (25, 0, 9, 41, 41, 'a24bb88ed1a55a5eb96dabaa64525de563901413639d240e6151c9eedbcf231e'),
-      (25, 3, 9, 41, 41, 'c588f878a531db49cf9ea0e87876003a55452529365538955d3ab42782be47b2'),
-      (25, 6, 9, 41, 41, '1a821f7233989043862206aa25bd30504a8dde18a20032e24493a657eb2ae036'),
-      (26, 0, 9, 42, 42, 'd02923e877543df074b5efdf26a5b8065101abd185d5916d59c6a67e54a7177b'),
-      (26, 3, 9, 42, 42, '84a50ba70c76060f329e1b22071ddecc8803f7ab083bd899c5c96218ab0c93f2'),
-      (26, 6, 9, 42, 42, '1a6b741e8e1846f896fee954e422b48c30639cb0c050e50337b8e646f457e8b3'),
-      (27, 0, 9, 43, 43, '2c701d56941329b13669a9d35fcf15aca518194cf8c9bf23be10ea1fac68da93'),
-      (27, 3, 9, 43, 43, 'd1dde2f7cb06e0b1eac1c0a0fd44edbf50ab53cf2bdd94e97aede3c0e7ae5ca2'),
-      (27, 6, 9, 43, 43, '194bb921b71faf4154cc3145afc1652ee1f5cbb5271b59bf36a44c18954bd51e'),
-      (28, 0, 9, 44, 44, '157387272447ffa6bd4dffe247f0a8ed6cced1afefbe294e9759207dfa928edd'),
-      (28, 3, 9, 44, 44, '6032306c5855632d26d21d5e523146db323d322d52ad96ad13b815529cd55906'),
-      (28, 6, 9, 44, 44, '1e58ef598b916f1092d2a576204324d9628736711610d4d8b28faa69a398565b'),
-      (29, 0, 9, 45, 45, '8ef00e70eec04188432ee3cdf06aaf5f8a70b67d746d723e779e37cf255e7e57'),
-      (29, 3, 9, 45, 45, '47beb753ca5d22996f2613d216851657dbd32346eb8b8ecfde77ba2a3e475305'),
-      (29, 6, 9, 45, 45, '03721557b78b5fa383d9c81488ab24b7d033bd1b53537ff6ae9de9a487ee23e0'),
-      (30, 0, 9, 46, 46, '1a503cf36668310c171d3b1908e16af2c79525648d470c3247d49286fa13c474'),
-      (30, 3, 9, 46, 46, 'bf86ce3aaba71a7d0e823339d11d52e5db6adfa69c00c5896eafe9a5cd73efdc'),
-      (30, 6, 9, 46, 46, 'a38f000d6474d7208c6a5c0ac176a4b9173c9b8759a42f748ad1dbaafc48ddf2'),
-      (31, 0, 9, 47, 47, 'e01c89ddf285a808cc59dd30341979021e680880c09128e56646893853f8c8a4'),
-      (31, 3, 9, 47, 47, '08f7f319765523f1f252f09c4922d7b5f4ab489430167fa3a1670511fa1c12f5'),
-      (31, 6, 9, 47, 47, 'acf788970d3826a2e336da1830c3cb3f47bb8bac47549f9b3117cf2fac70496b'),
-      (32, 0, 9, 48, 48, 'd93da555eaaa95d22d99ac77e1940624cfb87dccbd77c719d4068ff71c6a9782'),
-      (32, 3, 9, 48, 48, '957078a4fe289fe09f3fa9e029d1f3b8e0208bd91719f02efd9309b7d0cbc416'),
-      (32, 6, 9, 48, 48, '03384c23f91a22d72bd94aaf4248f2403f50ba91d87e947ed3666567f488b81e'),
-      (33, 0, 9, 49, 49, '539a2fccef6a006d4f517540d56793e9be1341e8dd53341ed41913342e849d1a'),
-      (33, 3, 9, 49, 49, 'a82f9b8d65fec085550f13f943c37066e8b72acd26315964a86c58bebe5a5857'),
-      (33, 6, 9, 49, 49, 'cb96c5e3e5b63b442382f3c877dc48348a7bec99a68335dffc065ca75007cfd7'),
-      (34, 0, 9, 50, 50, '34d6781cf6e48453714e57f44273cea8073587187cbfa582df2772fd4b05b0ab'),
-      (34, 3, 9, 50, 50, '463b64415db029d7e867b9737f8f9dd1dc652abe7c304ac64d5729246c476873'),
-      (34, 6, 9, 50, 50, '12a31686a0dfe8c4eb3e3c63c791513289192576981c081066ac8bdcbe711d37'),
-      (35, 0, 9, 51, 51, 'af5d49e6e42328128857a3cb3b064c14ffaf680b2ddc27243719988f6cf970e2'),
-      (35, 3, 9, 51, 51, 'e2dd68fb3381d341bee0fa68583b558387027067ef9f83bb8cbc6d0dcb01ff7a'),
-      (35, 6, 9, 51, 51, 'd1aa44c84feea301ddfcaaaca1f6b381870bf6b6fadef66b3eb6bb1eb3e8a540'),
-      (36, 0, 9, 52, 52, '1eb2e7bc51fd9dfb1ea02c1675f784efa7087855c1f791fd4bd92d99aa2f99a5'),
-      (36, 3, 9, 52, 52, '23026a91ce87e0f535091463b23cd61ce28ff13ebf0c0bbdfdf77cd30c2870d9'),
-      (36, 6, 9, 52, 52, '5a8d6e7eb10c094ec82bc6b1e7ccf4b35f0443a6c2cd39bbe79103869999505f'),
-      (37, 0, 9, 53, 53, 'a7db595a870b83d019aefa8bf1f01f20337b958339196e91e7c2c75ae51f65ec'),
-      (37, 3, 9, 53, 53, 'bc08b1743c518314df8c9fda918f9ea908fe9afb45910dcc51222a1ccffd6e66'),
-      (37, 6, 9, 53, 53, '1056d0defff8c1ad62c6444c15a6887fc7fd388c807a8e2b1870ad7542c68b09'),
-      (38, 0, 9, 54, 54, '2afa136a26802e24f52b6f99fc0d9636ffd4e07a2c360def977954cdfeaae085'),
-      (38, 3, 9, 54, 54, '24a1f9c8c571c1d034b5a5e0925ccefdcc0bf291b51da8179e8dbd55767b0750'),
-      (38, 6, 9, 54, 54, 'bd0a89ed8e89b12f8a6d0715b2680cd54f41bbe63af38f6974df40bfe7a1546e'),
-      (39, 0, 9, 55, 55, 'c089c997ea965416b0fda611986b9032fc64d0078e2e7a63ab02070ed4d4e06e'),
-      (39, 3, 9, 55, 55, '232dbf89d0e92fec24a30c84cedf3313b8e8c451f22104c11a1c4377e571771c'),
-      (39, 6, 9, 55, 55, '2628bccfc229f0b8b998c5b4a0321f83c6f62d31785d21bddf4256f7e851c7ea'),
-      (40, 0, 9, 56, 16, 'b376679df70fc00756fc58803d1182a2433e3d48dca46271be119e682a843661'),
-      (40, 3, 9, 56, 16, '4d543005d7875e425292ab3a03a1cbd3716628ce1219913a423f6950673685d0'),
-      (40, 6, 9, 56, 16, 'b0c6e0033f1f2eb09f7017c7bef99d3905094878d51af055bd72a05e91f84771'),
-      (41, 0, 9, 57, 17, '8dbdb21b6a2067abed2697673eb4048d44ec0ac7eaf1e7972265e7718c2461c7'),
-      (41, 3, 9, 57, 17, '9dadbce8af6f63dc28c75eb5e8f70b0973a891a715b3e3ca9265cee2ec1119ec'),
-      (41, 6, 9, 57, 17, '5c37df3c677e90e8e4b8ad760e7a9d7122e49e5f8403b2b369e2c331a15bedfb'),
-      (42, 0, 9, 58, 18, '2088f95afb21412ce9b2c985617aaaea649044d5562ac6752df8770d3c76134d'),
-      (42, 3, 9, 58, 18, 'd110b9607622a23592b492b42e0ccebd9328b25914e4f61480a088dfd8473d7a'),
-      (42, 6, 9, 58, 18, '331ee14ea9e707bc7de301bcfa7368e21fe45aaaae3ace7c7532086dac16f80a'),
-      (43, 0, 9, 59, 19, 'e84e34dc4b0f15c87307052d7aa48d70a851cfa796e8801cbc2c4d576cad97e9'),
-      (43, 3, 9, 59, 19, 'dbc3a5cb51ab019ba1ec9dd841bc5584c5ffdbf99373f187e0386694680dff96'),
-      (43, 6, 9, 59, 19, 'aa1a6c4ee7805d4fb8bfb8723e715a1679c26189043dc0de91a3432b97274e0c'),
-      (44, 0, 9, 60, 20, 'aa3cda610485f81e633e41b84f8b108da189337596527d7e82b65144132e311c'),
-      (44, 3, 9, 60, 20, '0b249ef8a0a61392989855f01aada4462728d4cdc34147165767a1a2b66d4d38'),
-      (44, 6, 9, 60, 20, 'f023a645b65fc073fddad85eb2a7fdb011b49acb4e00f69c1d4a7cace4b6e809'),
-      (45, 0, 9, 61, 21, 'faccdb6c764dd6e266bd72bacb2fb3443f8b79dbc220513d13c914da52d79cfc'),
-      (45, 3, 9, 61, 21, 'b7e9bb82ffbdba377a7d80d6d50c2b245134028581e8788ff73cf6673398c903'),
-      (45, 6, 9, 61, 21, '535d009cf1eb24cd490dc0b9372b61653ced07f533cb4d0aacb0badf6a182ec7'),
-      (46, 0, 9, 62, 22, '6fe1806e79856aad39ff3a3ec3da326f3ed3f76013d34d7078763f44d62593f5'),
-      (46, 3, 9, 62, 22, '61fce86c9ee6f09b00a6970e9ce448658aa4efc70d9dc52b69e214fb11803983'),
-      (46, 6, 9, 62, 22, '9154d0d1abe116a73cf1ce17f90261f32a4ee82b47f1bfa0968c394b8de314cf'),
-      (47, 0, 9, 63, 23, '7af875c080872235b2f205194d12085ea60120beae0c46e90a78aabb2611da97'),
-      (47, 3, 9, 63, 23, 'c8dc468cb50f3c5c32299b5ecf5ac7857b3e80b712dc5545a1b896681be505e0'),
-      (47, 6, 9, 63, 23, '0b883d0b25e89f03d7a899473a8a663fe54fccd66ff0220c2f88c8328fead8e6'),
-      (48, 0, 9, 16, 24, 'fa7613f84cde3ebc469a327e00ae772a647f3e6c0237e368e1d7e42cb3f67c3a'),
-      (48, 3, 9, 16, 24, 'bdbc57a5a5ec359cf039e38c83adfed0f84dd6b0dc365d29b24d8458b88ecf4c'),
-      (48, 6, 9, 16, 24, '551dd18d551dac9be38b64395d45c5f7c7b3d1f1845097623fbaaa32c6a25f17'),
-      (49, 0, 9, 17, 25, '5abdd05bcd748098c718c61b74ffca55333bc9eee7b0b2c86a3e3ca05a29942c'),
-      (49, 3, 9, 17, 25, '0a515ea12cc55129593e6b7c30ccc3007373568db556c065e7f4987e94ea4876'),
-      (49, 6, 9, 17, 25, '435bd382ddc22bdc3ba6761c69bb52dd92939dbe748e41947228cdaf5e805b53'),
-      (50, 0, 9, 18, 26, '96119b1e8840431f42dd80a1d129f9a79ed0bfde6665f41103b569c15915d38a'),
-      (50, 3, 9, 18, 26, '1ec0b9fec820dd6fbd77d825f9071bc8a1a793f2c714a7b539f8dd3e2aaab462'),
-      (50, 6, 9, 18, 26, 'b0ae413da840ed115d4339db976ce9234b1c570a074d56ffb2a3a2cf2f036fa0'),
-      (51, 0, 9, 19, 27, '6adf155578c74ab47ebb50eaa9011dc017a6137c27ef5f987072d9c3012b9994'),
-      (51, 3, 9, 19, 27, '910e3f298620d5a8ded66f57032b78f4dd0a202b63578f44a72a9d2d67bf6190'),
-      (51, 6, 9, 19, 27, '3db85052a1f54481fea8cbacd6713b18702ebed1d20e96b22581133e49361b20'),
-      (52, 0, 9, 20, 28, '158218014d9bc35b565f0beeb974d059a49c86d31dd24d913d68ad4068fabe7c'),
-      (52, 3, 9, 20, 28, '08473f986441151a57de1e006b02b414d740a3d3ccc4a27999473f11491a3df1'),
-      (52, 6, 9, 20, 28, '10feec623acf88e22a0a8af7ccc1e7d21438c8f2f710c9871da12055a9ec65e2'),
-      (53, 0, 9, 21, 29, '7285a406223a2da3dc6452830c784aaf381c2bef887f1196044cbfb06e0f732a'),
-      (53, 3, 9, 21, 29, '3c3069bfea3f89c3b74150b0de54390cd514378eedefa8b07833671224df9256'),
-      (53, 6, 9, 21, 29, 'fa71f023cdffb2acd89235125df9a67c0914a96a71b44aa465eb6fc910451f59'),
-      (54, 0, 9, 22, 30, '5b394734dc67f65463477f9b02eebe1671a68ec7b2e55f544156c8e46507ae3a'),
-      (54, 3, 9, 22, 30, '519e294008074f9ad42dc74bff6ab7d6588b6fe46c2c8fd3a34e203a63b2a4d1'),
-      (54, 6, 9, 22, 30, '16f4ba5e3fd30dd411293cb1c15b6e2e186e635d8f9500296a894690bf879934'),
-      (55, 0, 9, 23, 31, '1228f32113a078f587e18326bc8b8409ab1abc73562c13931d0d3767ba77145b'),
-      (55, 3, 9, 23, 31, '3bc7bfd72caba3ce4b90d8d8c22b115871cc4c8316e40d111f88bf9531c48007'),
-      (55, 6, 9, 23, 31, '9b46b7204bbd0c878e892518cdee8fc9c4055b98219dd2fe9147f68068f66034'),
-      (56, 0, 9, 24, 32, '0bed753309d414baf564eda241fa1627575927c7efe92552f3fb9956a4297649'),
-      (56, 3, 9, 24, 32, 'e6ec2966f5cf0fcfe201f5762dbdcf2c4ec3e3dc2ca2e70d7665e295e069c1b6'),
-      (56, 6, 9, 24, 32, '04be33115728d25d8b89ae08c6073a6043c14e79a83b9596b08efad545f71f31'),
-      (57, 0, 9, 25, 33, '9fa91f3fce7341843e48ceace516bd08da710e7cf5074fcfe51f12377db13438'),
-      (57, 3, 9, 25, 33, 'd9b271d5a067594a6dfc1170e1a60c9aa5bd473e2982333b7bc26980724bc377'),
-      (57, 6, 9, 25, 33, 'eac2961ea609f2e6eafe50368faeb46d2da765fc609edfba69278b2c03f59bec'),
-      (58, 0, 9, 26, 34, '5e96039dcfc56f38422a36c03cfb810642de6df810825ec6e358e88ab0e8cd2b'),
-      (58, 3, 9, 26, 34, 'd35bcbee9d2fc86f3f2e290e0bf5d6deeaef42f9adf25713239cc5c4ea4bf394'),
-      (58, 6, 9, 26, 34, '1bab0d37e7f0098941e372ef4a45d413e7cfa8cc01760cd3c38ad7a57edda867'),
-      (59, 0, 9, 27, 35, 'ca9800db715e24bad76ffcfa973242dd0b9eb7d73b51f1faceb69c412a0c5e4f'),
-      (59, 3, 9, 27, 35, '9ff75062bbca0570cb8e72ac45332ab80e71ede5d964b67a784ef73e9c90b392'),
-      (59, 6, 9, 27, 35, '8265c450c7daff3c1e9778d11a048190222975ccb6129a0783feec0f2fa54174'),
-      (60, 0, 9, 28, 36, 'a721509c60a5a76bbbc11ceb92823f21b2b9f5fd000d18c602f715221b903ef9'),
-      (60, 3, 9, 28, 36, 'dcbd9ca2e1781415b9ec5788e690863dea5612664beaff3389e5e1d892f4890f'),
-      (60, 6, 9, 28, 36, '3fb5156ccd5583ad79c81cdab97382c2c899e4ae2039083f67c302e5315aac24'),
-      (61, 0, 9, 29, 37, '9a2a7d7b54434c1d86c9efde7c86fbcc29a4e3d0d19d1cdb3c836347871022cc'),
-      (61, 3, 9, 29, 37, '557249e1ead2188dff8329ae26849535dc10c872ddb651cfab353c18cb5af861'),
-      (61, 6, 9, 29, 37, 'c54227ad4c58c39eac0572bf59d3a8b514b63ba4402bf71ec9e694607f8b9863'),
-      (62, 0, 9, 30, 38, '4ff3e54d4aa752cfd3e6a06dad92c426134708b684b1104ffce983f893a92a96'),
-      (62, 3, 9, 30, 38, '2b59123ef34cc7b768662a4dfb039c8500a6accadd58434fb8fca082b6ac2e20'),
-      (62, 6, 9, 30, 38, '6245c6d5ec6c392fdaba7c4e19e4f5c278d72be9329137fd56724ea22e98c203'),
-      (63, 0, 9, 31, 39, '23cbe3b187375fc3d87f8e548fae99c6badebe003507437099d575f75cd114ba'),
-      (63, 3, 9, 31, 39, '4ae5f7b939a9a9156c3b42494f32aa3b127228c5eac6e2a804b189cb25a02b56'),
-      (63, 6, 9, 31, 39, 'af803631fc1cde9efa98cbf705afc2401f5762407a2300737558885d748e315a'),
-      (64, 0, 9, 32, 40, '1750967e9c5a103616d7403621019ae76be133a01c1dd6e05d511f80e7fbc43b'),
-      (64, 3, 9, 32, 40, '1869a6de2f4a0514bfd241989aaf2e2489aaeab26229e467ecc3af353ab0e296'),
-      (64, 6, 9, 32, 40, '4b3a8f5b5b90bf596267168561aa67b7429390fc1fdf256ecce0f8101c5d1c05'),
-      (65, 0, 9, 33, 41, '86b9a854c26d65d8654ad4bdf99e3af46736cfd2aa52f31441600863e48990dc'),
-      (65, 3, 9, 33, 41, '68e6a246a467baf89b5b52ba998b1292e42f4388825e3ad9c492fe31b83f0646'),
-      (65, 6, 9, 33, 41, 'fb2389d1698d4971c1d05d5c4bcdf88489b9836f60107ccba830c8509c0cab8f'),
-      (66, 0, 9, 34, 42, '55a4a359e245c8ccbc9c3772073270ff80c0829cc453ba359c3ac62bacd47fe7'),
-      (66, 3, 9, 34, 42, 'b1af01c8b3fad6f922583311a6611fec0d4900bece3776823174ba33b6d15bfa'),
-      (66, 6, 9, 34, 42, 'c32cb8b4b586513d2c4e25b007bc16a85931b665b2bb3ab723c7a6f78290bd21'),
-      (67, 0, 9, 35, 43, 'a9e9f34f84af6a9cea23e5a4e310b41452200a621904f3c45cd3ec9ec6c2a07e'),
-      (67, 3, 9, 35, 43, '39f36f3bbad047e2d06a68dc681ac6cae46dac9b18ebf8c7a76e663150faf64c'),
-      (67, 6, 9, 35, 43, '06bc29c869a670058d994e6f0ed24ab5f98cdf3a3ca35d78cf9424170f16e179'),
-      (68, 0, 9, 36, 44, 'ed7b3a76d5d4447aee2fd7e5f638ffdfe172c0acbc7534a07a6a5c93d972de31'),
-      (68, 3, 9, 36, 44, 'ad14d7cf62a608b0e3d5e8a8ef5335c202a66f1c21d6a232879d44138cad3a97'),
-      (68, 6, 9, 36, 44, '6bc089f90d6103029d4ae2b126ef8476c274963a31408b6b93339a1ef54e2a9f'),
-      (69, 0, 9, 37, 45, '631293f717c19489de28ce1175cbca7a0fb9abf3c09bb81ef183233c11b26cdf'),
-      (69, 3, 9, 37, 45, 'c975fe95a7bfd2f74c875d837734ed3667f39b1300ce1aafa5057e60f8a0d88b'),
-      (69, 6, 9, 37, 45, '9c6f116cbe663819ab933cb56929febe0abaf7162f829cb775afd2f81843d071'),
-      (70, 0, 9, 38, 46, '5527ae914e2126800cc79f48aa56d9c76d2ddb552fcfb3ae66ebd0ca51987d36'),
-      (70, 3, 9, 38, 46, '8ea93bb7643fafec8cdd413bed5bb4dbd93e82aad39bbfed57cfbf600e192d8d'),
-      (70, 6, 9, 38, 46, '95815902def3109dec348d5c3f555e892ea3e582ef76cc32536bb1ff3ae7d4e5'),
-      (71, 0, 9, 39, 47, '6b1cfbcfa532f8898f2d99d3d38aaee417d58821cb2ee92f26ff227c89d58098'),
-      (71, 3, 9, 39, 47, 'e59862b0e0a0919b461b8e5c8ed9f92a8eb31bf02b85bef3e16ad8dd0bd54708'),
-      (71, 6, 9, 39, 47, '4153c2d5395c62374155b9b909c74ae11b55032828aac63b829b41dcff9af35f'),
-      (72, 0, 9, 40, 48, '7a3741d4252b0c352794df060203a360ddadc1fb363dbdb720a9efe2906105b0'),
-      (72, 3, 9, 40, 48, '0a4441d6c8e8601e606cc0454e7600f31f7a64632bf5e44219be212738a37d5d'),
-      (72, 6, 9, 40, 48, '6805870ac7e60a876631532cc7bce5982c74134d1c8af3da7e58782852d2a4e9'),
-      (73, 0, 9, 41, 49, '1d477fa13cd4bd445fd3cc38c991a0734855f73a6d7f3e519f74a8ece74417b0'),
-      (73, 3, 9, 41, 49, 'f6154934c8b1f716d6515a21f04263672290f3e3f9dcb7bea1d9a4ee2e50bb88'),
-      (73, 6, 9, 41, 49, '230f130df28fd8b3e99d71cfac09f75c0e7a9c50fe58111d08c856220b44302e'),
-      (74, 0, 9, 42, 50, '6ee3f1907452b3fb351a67e03f0f26467ee9092bc863bbf7dc2b6d51ad22156e'),
-      (74, 3, 9, 42, 50, '36405d492e6ae0b4d51d9f37fb0808c123847ac16fc00a8ec93e90e5592d9c38'),
-      (74, 6, 9, 42, 50, '2feda3a79b8f5af2ff3c02b2c4ece79259e3d2c2c4dc764bdd30adafb7519a33'),
-      (75, 0, 9, 43, 51, '4534838c832844fe65fd20a583cb1240d39c5969ed1b63ec6fc30b5dafaf973b'),
-      (75, 3, 9, 43, 51, '44f50763ee5d47b7bca02d7b94d01fa6c35ecc9d4e56df299cb9a9c265e191e0'),
-      (75, 6, 9, 43, 51, 'd3a61c9691cf1c18c7fd662cc2f18238996700fff7d0edcfebaa700cd6618de3'),
-      (76, 0, 9, 44, 52, '39e908402c9f8c5781fb47469d1bf746c14d704786a0825fb3d4c46271a08684'),
-      (76, 3, 9, 44, 52, '38f871d78fe138bd2b9304d7b5362125a930d5afb85a37a2bbf38f19d12832b2'),
-      (76, 6, 9, 44, 52, '01eb702da8e48cedf2a8a861b3beb6144df28ded2bfc71774543428f56721cef'),
-      (77, 0, 9, 45, 53, '9d91d3a1120fc0c7da8b222f566ccd0ecafd3dc16f662b72c204c776b2f5f358'),
-      (77, 3, 9, 45, 53, '8978687db0957c1dbe3353c42d640d1fb76f914f979fda768169d74f8abc194b'),
-      (77, 6, 9, 45, 53, 'fb3f7566ebc87105e321fa8de4f59eb25daff8691a15e2536dca631ceee8cea6'),
-      (78, 0, 9, 46, 54, '23f22dcc3235881a3940b7cdec6792c0f053427a694747f21514d6b225d166b1'),
-      (78, 3, 9, 46, 54, '35cd228b4bf0cbbff96f478bae471028c10a9f271722e339801a4775c7015f80'),
-      (78, 6, 9, 46, 54, 'd203e4aa1b587fa319cbf87a6513a545e50f528531a7157ad42146514580ad17'),
-      (79, 0, 9, 47, 55, '5d21989acc6889569ea553064b9958d6ffeff82c2de85421f8599dea49a7e476'),
-      (79, 3, 9, 47, 55, '6274a2314b4f78e210dfe3965dd1a7ea7f82b8a844e4bc57ea28fb079185dc7e'),
-      (79, 6, 9, 47, 55, 'ce9fd857c4fe0586637b0c340d1ffe96e56a2132d746aef60585df8afffb8882'),
-      (80, 0, 9, 48, 16, '68f020bf50aeb00a04872f04f8f39d8f7d470e935f2e061e597543360596bff7'),
-      (80, 3, 9, 48, 16, '62f15caca5ef32d7250ab7849f9a138fe4dafdd45ec00f80df6631151e4e3691'),
-      (80, 6, 9, 48, 16, 'eb90e0dc55b1f8a9f7b7569b33d09097c2b9a61d0b5851048f39e858a5212fbb'),
-      (81, 0, 9, 49, 17, 'f79722e8faaa8aa36746b6d5a54ca9b221fce31f73c69616440bfb049e87f7f1'),
-      (81, 3, 9, 49, 17, 'bb62010e5365f8f0798c858e87115abedb9f459f9f11c4ab9eca27b76d1cc971'),
-      (81, 6, 9, 49, 17, 'e9d681fc1a63d3115296d197818fa99f21ff6a2ce05a4435b9093c3b3c437936'),
-      (82, 0, 9, 50, 18, '819fffa21e32a5c32c37ec00a2ee326bf5dfe25d76e43c7c2b649a12b80c95e3'),
-      (82, 3, 9, 50, 18, 'ad3255bc87eb4ecef869bd7de9ef177b86a9951a8aad6f37c9287401b4ac1473'),
-      (82, 6, 9, 50, 18, '6f348e9aff6799d3e5beba62ceaa1c1f31428e06d1a9dc18bd5bf364c0f0241e'),
-      (83, 0, 9, 51, 19, '7ea0d1349fbd6e31d562b2c8486cd4e73df3daf1c8c63ba8a16382792fcc84a8'),
-      (83, 3, 9, 51, 19, '24c00a9f3d4b11b2e1a83d32704c37a6e1b5e569e488dcf7dcc4b17805765d6d'),
-      (83, 6, 9, 51, 19, 'ade93aed7fc55e4b08f7c2fa875ff415826b763bdc6d416c52b4617f1200e34c'),
-      (84, 0, 9, 52, 20, 'c9750fd71d827678dfe81b55d6ef17c12453ee0eb05c8acb487bec6791052322'),
-      (84, 3, 9, 52, 20, '219de635026f0f4a07fbd7b687ca70b37f1d1e38686cf770431271a276b700f5'),
-      (84, 6, 9, 52, 20, '53c40a9aa597d7e0009de790a9c6a3c575df9d5a9c200368c1a0f2e5a3c3d9c6'),
-      (85, 0, 9, 53, 21, 'c23e6e1b28206ee891f6e2f0c17a1152ba4b62f991f540acc3876b78ab579950'),
-      (85, 3, 9, 53, 21, '50aaec1f20c6d18d26fc2d4967af3d30942dcfb4819f3e302eeeef19974751ca'),
-      (85, 6, 9, 53, 21, '133c7672751a1bc26e5549b812dda65f0a3fe746f48b952cba06d3d29abf867e'),
-      (86, 0, 9, 54, 22, 'fa14b64a2197bbd9090eada04a10d834a7fef4408bc9260cf299b526880d9bcc'),
-      (86, 3, 9, 54, 22, '8f6c55c79b6577635ec1511ecbc6f78c0989e067ac2622fb7b825fa80151f66b'),
-      (86, 6, 9, 54, 22, '4d5e65f3b0f8b00aac7be9338c117ed6052ba5174d8a20c83381e27cca5a587e'),
-      (87, 0, 9, 55, 23, 'db1b98e74cceecf628ad594caa9b114b1d2fb24edf3a5c0a5042c635c750a87b'),
-      (87, 3, 9, 55, 23, 'dd5a51418365d4674e7ab9f25ab94934d82d5702d1199f23b9676f91b5d747e8'),
-      (87, 6, 9, 55, 23, '3248260f472d04e3d6f29dace769bef5dfcc3b57a147844f2d9dbdd16c8d19f8'),
-      (88, 0, 9, 56, 24, '14c6cb17ae0c5a10c3cd289bdf2f936a6cc64c3c33d2054ef0b5864d1c7f8a68'),
-      (88, 3, 9, 56, 24, '8e8957970afdcd493f91c0c3baea125109fa4dc9a127916812340b5ebb24cb4a'),
-      (88, 6, 9, 56, 24, '552a5cbc2aec3ef8193b64a084977f019dbd9e0dbbc3afcf318ee38f006f09c5'),
-      (89, 0, 9, 57, 25, 'a5c38ff14e9d719675355a9bea47a578debba8ee756e807d117d541fa8589fe0'),
-      (89, 3, 9, 57, 25, '985a017c12f20811761e6c3b1a4fcbdd890dec3edeff563a81370d5222e23b35'),
-      (89, 6, 9, 57, 25, '4c8a3144758b99c348e0256991ea0305de72c619432960238cc9fea24deb6e2a'),
-      (90, 0, 9, 58, 26, '18c399069835981fbee9e5b781689d77d267fee4a182f22c435e73f0ade1c895'),
-      (90, 3, 9, 58, 26, 'd94a40b0b331be9cc4b76dd7aa4a5ae7404c4d3d4f5004f306b9a91944ae4023'),
-      (90, 6, 9, 58, 26, '9323d693082b00d21bd10bec890a338c03413449a27f739459909310ddbda2b4'),
-      (91, 0, 9, 59, 27, '4fffcb25e04286876b0801a3740146766e2abdfe9fb6e0f5b3a4d63a6016aeff'),
-      (91, 3, 9, 59, 27, '129ba30819ae15d49ddbd42e1c4ec85901dc4225ee723474fc00e5c8038b59fc'),
-      (91, 6, 9, 59, 27, 'bc5d856bd497bdf32c7b3c67df2cec619efc00c04b94051089fabfe57a31a346'),
-      (92, 0, 9, 60, 28, '0318b86dce0306e15022116b4855f84a4857e452dd74fed9b90ecf828525f5cb'),
-      (92, 3, 9, 60, 28, '1b28b3340673b97bd4f75ab4cbb4503054828f04a4d83c24589ebd6ea858e3b8'),
-      (92, 6, 9, 60, 28, '19b4d362fbb249cce08ae987b4b94b3a1962509f01a031fbe57d4cc8a2630175'),
-      (93, 0, 9, 61, 29, '823098a7803fd8a6b35ae9d8f8b7d673596b633a68ffc549ccfd5295e02ab674'),
-      (93, 3, 9, 61, 29, '147b66ec1530e0cc9d50806a4a4d1364e36fcac2e4e5792bcff1f48c011bb6e1'),
-      (93, 6, 9, 61, 29, '2adbb2a87c1620a6adb0c6f25b466209b5ddd6ae05333bf0673793a7a1103a1b'),
-      (94, 0, 9, 62, 30, 'e1d3fa89f0620c307dc46aabae6b84041f1ac9b452fb326d095b9b12a1740ff2'),
-      (94, 3, 9, 62, 30, 'ce7c825540b5eae06edf3b0e69a83a3e88e9086546a55cc0d950de1707929adf'),
-      (94, 6, 9, 62, 30, 'fa20619f0a2c368fb3722a233973d481ce4a5adaa08ae100cbbadccb0e7352e3'),
-      (95, 0, 9, 63, 31, '9f64f1f39279d3a6a3f63b53c169a5d3799544335916f6921f4bf3c2d786bde2'),
-      (95, 3, 9, 63, 31, '562bd8f532fb71b7fd7cfa9bd7cc7d1186d2e26a414e2b94c85125d882818af6'),
-      (95, 6, 9, 63, 31, '7a0aea297e79f28211f06dc554514d2f093ae0caa9507baca52788fc2a3ec53a'),
-      (96, 0, 9, 16, 32, 'd435f644922490082ce186c00c4bbbe55370fff6da07356f1c2c6a6f078a2b30'),
-      (96, 3, 9, 16, 32, '395552329cc173f9554eae17fbf0cd1db9e91040a847aac0bcdf135051476e31'),
-      (96, 6, 9, 16, 32, '04e6e32e16675473172f12ae3c44cbc750091c2d5f8bd41bdf420c44e6178c2b'),
-      (97, 0, 9, 17, 33, 'c8740dce7c1f40f8c5e5099c7b0634f313dcbb49e0ea030a24d5b8e118734163'),
-      (97, 3, 9, 17, 33, '7b06030a46cf296df4e30998f126b6a06c337e8d5a744c232385f9e1731a9b34'),
-      (97, 6, 9, 17, 33, 'a921e9c0c121c27225c1f41c8fb5027dbae061731aeb19c7ddb1172376145b03'),
-      (98, 0, 9, 18, 34, '718de6ce44eb09af2204362aabfd3384b9c132414bc3b4e79e2933475af33b99'),
-      (98, 3, 9, 18, 34, 'ffad07482743f47570b8991fcb36beb8b8339ce2cb1b4f391fc94860fe9efdf9'),
-      (98, 6, 9, 18, 34, '9ebacf864ae03b8ddad143ce26899b1cb95ce3ad58daa67ed462208ae7c756e9'),
-      (99, 0, 9, 19, 35, '3bc692c035c7aff3356c9351e5354ec95a527085f39ebda0ea780a29c097f640'),
-      (99, 3, 9, 19, 35, '1db82243956ae6393c1f7b95b8ea27942239b7dd0eed69f3e3b2be43025dce0c'),
-      (99, 6, 9, 19, 35, 'd762ad07a72a30ccd4ffb33cb62b28445256e7bfa50fca97c47ce0cac09be18a'),
-      (100, 0, 9, 20, 36, 'e50f05089f51080f856e3c0b2685ef9dc8b1740dbbad8e614d73dfa4c3266290'),
-      (100, 3, 9, 20, 36, 'ec42b3b012d558684d9496bddb54bf7b55d62a5b56535af06cf5b7604f3da6ca'),
-      (100, 6, 9, 20, 36, '4f91cc43069b89561d54c2d5299b7dce0f4517a9f32af890a99a38e8e15bb90b'),
-      (101, 0, 9, 21, 37, 'f0ba6132ce731dc4bfb2238356b72a666e7b48fe3c05e10382544fad15604895'),
-      (101, 3, 9, 21, 37, '2f2e993155944157b2019ab4f2387c6acf7615443e72edecbdc5bb5880b16757'),
-      (101, 6, 9, 21, 37, 'cca6d4291c1357ec09bcea7cbe447d7d6fce002fed45c2438b476bbb9369401e'),
-      (102, 0, 9, 22, 38, '00a747eaa132d7c8a3c09f11d4acc3d0de2056a481a9371dec78b1047dce6ea5'),
-      (102, 3, 9, 22, 38, '0fad0a5b64e60cc9101f44b5a7b1c1318e5d310216bf1a582a44ed3a2082bfef'),
-      (102, 6, 9, 22, 38, '5ce66e6e39a0e474f7457fb87dd02b2afdbc8a76d7769ebe521505b07be47178'),
-      (103, 0, 9, 23, 39, '0a44123e28bdbede1ce730bf84ff6462c67af184e939d10ce8546059f6edba1f'),
-      (103, 3, 9, 23, 39, '19a2f07f0b43da9db32c72391b54f8c2a222b087e5ad92e893489aae9b2a42dd'),
-      (103, 6, 9, 23, 39, '1342059f7f9a824e0d0d03cf542db9ee33d3a0aa89e0b57e9cc283ab9eb788b3'),
-      (104, 0, 9, 24, 40, '587766bc3249b80c9fc35ea06cffb996079cd0673483480bc83c72b4e96ad0e8'),
-      (104, 3, 9, 24, 40, 'b6c7219574c76963c260480551e054102d8e4cfb1d1a63ee8339e9a335957d7a'),
-      (104, 6, 9, 24, 40, 'a63c2c187bb796c4aabfadb60ec6b1c76fdd586a0c0b2d2666d5e34c90397117'),
-      (105, 0, 9, 25, 41, 'e42fc03bd95f41d0d7ca6a29c576f8665fda4786862da6a762ce27ec4c0ea064'),
-      (105, 3, 9, 25, 41, '540e0c647db8d694f309b0d25e778ada14f0e14210a110d52f989b2a85c2a4b0'),
-      (105, 6, 9, 25, 41, 'a73c3909ecf1ada4b56acf1f61593a7eff03ded0a43974795734721f06f58d3e'),
-      (106, 0, 9, 26, 42, '63a49e592730d6892df41f711c5b881dc09dd09727a0bf30903fdf8c4641390b'),
-      (106, 3, 9, 26, 42, '79be8d123bd3e7dea41302e7dc999a5ce72118f2a0eb99f5452c3e0a13d643c4'),
-      (106, 6, 9, 26, 42, 'ed087ce086ac21228d3abe7819c659d88a9c7d58e10b5f0753e6bdd2d1fa6bee'),
-      (107, 0, 9, 27, 43, 'd1b6c49588522ebc6df0bc1b1af7afe9e153654ae4f5c96d5237544906a5c514'),
-      (107, 3, 9, 27, 43, '31398a8af6fb6bde43d6ecf657b0ee8d7e2870065856a24208fd552d34289d8b'),
-      (107, 6, 9, 27, 43, 'a9efc1e57207509da598640861c39621054774566425af238d28ed343dba6e18'),
-      (108, 0, 9, 28, 44, '2cb7b33714fab85b60f942fada6f421e1970c76987d65f7cd6be3ccd503d1b89'),
-      (108, 3, 9, 28, 44, '771eb7c954a8693c7c949765e4b07580aae53ccb5310588d817858fbda1f13dd'),
-      (108, 6, 9, 28, 44, '9b8681e08ca718538d63a1866b0927cf0f045fb050beb9294c96477ec8462b6d'),
-      (109, 0, 9, 29, 45, 'c28f6f19280b2ddeca3b3143302fbb2c12358a77981a98a2af4cc8c7c61aab5d'),
-      (109, 3, 9, 29, 45, '2d9281f22ef2518b0636b87e30117bbe8d7262d9847f5099bf39ca3f2af3f5c5'),
-      (109, 6, 9, 29, 45, '9189acfda59a135fe4c3fe830a2b47b866e0d0db65b4d0cd5395d1928ae1ca7d'),
-      (110, 0, 9, 30, 46, '7b10453e3f69c0082e7ebc129f229c5f580a33ee847c9202034e63b4678b9d6d'),
-      (110, 3, 9, 30, 46, '255fef801ecadf7ba0ae2636b89b34ce056b0643cf1bafa8799aa5ab8416d61a'),
-      (110, 6, 9, 30, 46, '1441627fd5c52ddc3db0a5ba1b9906dc73d4c435715d7ffd92bb9aabd723466b'),
-      (111, 0, 9, 31, 47, '2937e3390b941c2c76255ea46e3c7ec7ee0bc230bcd376d52963a8e1e46daeb3'),
-      (111, 3, 9, 31, 47, '93f51739fd251d89a12bd7069901e6896d33e57d00a73766c43aad739ce9e7c8'),
-      (111, 6, 9, 31, 47, '0083c0f1b988d4206842a50b86cd6ee9026b680d5ccdec96d3640d2cea2f5758'),
-      (112, 0, 9, 32, 48, '7b9afd84a16f814f2eadb5d8e8b2cabae35c50b5c6891cc0344ead1a6cc69404'),
-      (112, 3, 9, 32, 48, 'e4dd71b23c4693759cd03bb38f5212f07e2361fe47eb4424931be7b975f95cf6'),
-      (112, 6, 9, 32, 48, '8ca4fbeccd529ea36cf91959b3ffbe023543c9d747d7d7406b0461cdf9e9e3ca'),
-      (113, 0, 9, 33, 49, '3a6156049a83670624a3f0428d0ebf631721327ad0bed8a40dc31f68d96ab1e9'),
-      (113, 3, 9, 33, 49, 'a8442072da8362cf3a040d454d8654dd40995762471ff1361e59ce366cc85bd8'),
-      (113, 6, 9, 33, 49, '4747755b0ba1a59f20361daa77b6f1aad9d9b047dfbbbe4b5f551217aa8da962'),
-      (114, 0, 9, 34, 50, '90fd0f3ede3d97d5f96fb77fb1718ade20bdce1eef5704074415d22566489dca'),
-      (114, 3, 9, 34, 50, 'fa26003fd86bb6c8a232d0a49cef15f24c73800e6a742995bf310edbd107c0d0'),
-      (114, 6, 9, 34, 50, 'ef3d91a1286b5a55f1a6d44a8e0f0ab1deb7ca09ad40b7894529e13b176fca3c'),
-      (115, 0, 9, 35, 51, 'dca7d284fc43217ac6445607ed3b2163fad763297566adfa3936aaf138d64cc7'),
-      (115, 3, 9, 35, 51, '8553d3714295555b3b29efaef55d85d025cdae176d81ce954d5475cf8a8e6bcb'),
-      (115, 6, 9, 35, 51, '0e4d7e3b71329a12eb2ce4562b78b8bc1c4b192e47c0b2397d75da4a1aeeb620'),
-      (116, 0, 9, 36, 52, 'ed2df4df560ae35f96e06de8c8ecf0b20438266c17913a164ec813550c2f1e1d'),
-      (116, 3, 9, 36, 52, '5bb84bf0f5dda5347eb235b0b79a3ab61d595b8d2660d8d6c32b68381122ac5d'),
-      (116, 6, 9, 36, 52, 'ff1b2fabc8f97027dd0ca24c01877998d6d940821548c94499633428417f9dc5'),
-      (117, 0, 9, 37, 53, 'cd254bd7bd616f014d062affd4bf30a5a9ceab7707605d1d72f147cf1a5e59da'),
-      (117, 3, 9, 37, 53, '53d8c843cc005cc5872bc10d68e14efc3fe5f059c5a7fb2b1af58161e579bc65'),
-      (117, 6, 9, 37, 53, 'f41ee438b0e249910719622bb4e46896f7e625d3eb65f92a5bdceea208f5c12c'),
-      (118, 0, 9, 38, 54, 'c54e8f87bdcb3cb4c62b0e62902137b3dc9c57192f9aa421a1d7d904b9d9bdcb'),
-      (118, 3, 9, 38, 54, 'a60b16cbc6fc47de9017137f87a73d41239e14346f9a42d82528e5a1876d4b36'),
-      (118, 6, 9, 38, 54, 'cc70200e78367c2d0dbe7932246237f90bbf1f2eb559b2b98edd2a71c3b0b744'),
-      (119, 0, 9, 39, 55, '2951628a98327a9c6358972b64406f3344a40ae64ec40937d37fa814327143e7'),
-      (119, 3, 9, 39, 55, '87940fd9f8e84d794f5c3363cdfccb091a86356bd1d6e9fb321866f824aa2b8c'),
-      (119, 6, 9, 39, 55, 'd341201c9bbbe8ebb452b09ca27827690c7de2584c80cba0a59fa9e1ae3cc626'),
-      (120, 0, 9, 40, 16, '969fff50bcde4211daff0b3c7f3b5a49d29dba1c4e9b2b3708d54839fcba9ad9'),
-      (120, 3, 9, 40, 16, 'fc891fe927e275767aae98919e5233e10ec90495cd058299408a52625e289354'),
-      (120, 6, 9, 40, 16, 'bf287fb459bd4c393f7bbb44e7c9b2712da441d6b68337db921a4d2b6027ce98'),
-      (121, 0, 9, 41, 17, 'afd9e97e2bf1c4406ce13ac0d812bcf419f8261b5d2558c3634f9e293b14b84a'),
-      (121, 3, 9, 41, 17, '445ddc53fa96e6b10cdd49e00e8000c8893f56b16de3a25e87249dd9dac2bafb'),
-      (121, 6, 9, 41, 17, '423c71b2a4997c6536910f90c9d1a558f5f6a52680188c0b406babd61c227cfd'),
-      (122, 0, 9, 42, 18, 'af74c3e02101ebbc0382cfcc5cb963b56d6b1abc71510e1858ebd9c1cae39fdf'),
-      (122, 3, 9, 42, 18, 'b068ed5f3d3c69bb4dc26623672441bcbc04bf4d6aad9f9636fe522d32808578'),
-      (122, 6, 9, 42, 18, 'c1e82928161d1fa9a4afdb6a945458e72e7ccf8d1eb375a8abf226bfa5e1a51f'),
-      (123, 0, 9, 43, 19, 'ecf36c9b8efa998b06adf5167c1910c74f9e0301b267a313a091b5021a0349b9'),
-      (123, 3, 9, 43, 19, 'dc4acab29e207b6550b65a762243c2e10624c235436f71c627843179bc9a08eb'),
-      (123, 6, 9, 43, 19, '21e816858683d51e9b7a004346f0458ac2be03938ba0ecbd922bc3e6c46b08a9'),
-      (124, 0, 9, 44, 20, '88d99b7b36eb92fff767e76a1c711394b3f873c67e9c25e082d567186817d6cd'),
-      (124, 3, 9, 44, 20, 'd967a2debd955ddc7f5179d9a5bc6524ea448f8f44ad784368a7885363780195'),
-      (124, 6, 9, 44, 20, '18c48f30f5f9d44ab4224bf6b3d3928d77af916f15001088f7ad7933c3feb264'),
-      (125, 0, 9, 45, 21, 'c9dfd4603b35c39df1304c51245db19a2ed9894f14a39b11bf8ddb86bfd5f8f7'),
-      (125, 3, 9, 45, 21, 'cbd86a79f8536fda17d6c6653dbcefda7741c14fcb43f5d17f0f86c4ff77d7be'),
-      (125, 6, 9, 45, 21, '86a5bec9ec2f055d77dd9a4911a056a72f6facb8b0ed4864a63db4bbec040c38'),
-      (126, 0, 9, 46, 22, '57ab134bbd06d6f8812a275b953e802b8e51ebf2e36cb10f334bd3a1eb418404'),
-      (126, 3, 9, 46, 22, 'bb417f73bd87e99e14558cb12b0f2468f5a679158d41b35fd4e37a0d57020c15'),
-      (126, 6, 9, 46, 22, 'e757258a3e9d3eb8fddb5ecc74dfbf487497d802833185becb45ebd9b71890d6'),
-      (127, 0, 9, 47, 23, 'a350b8a33871ace19c1453ac1e091dd0111bafe65148ae836165f7422128a1bd'),
-      (127, 3, 9, 47, 23, '91910cb1b2c4677791cf749b2326e717b26d63927402b413fa6cde39721e4ec7'),
-      (127, 6, 9, 47, 23, 'c7554e57e9e8790f8b1b8a7f16a54e4a31a8c20587ae8e0f0d7950f32425dedf'),
-      (128, 0, 9, 48, 24, '8377c0986399dee7d6a515e0ece0bc7285ee99de1a0a08ea6cd7cc555cc45fbf'),
-      (128, 3, 9, 48, 24, '3f70055fab97905087607c6457d163e79b93a47c84b094c60f000f4a9e06aeb1'),
-      (128, 6, 9, 48, 24, '1abfe45e849b3b0d9a8e6b142c11b1dd2e0410fe7ad75fc1ce1b5bff6c160df7'),
-      (129, 0, 9, 49, 25, 'e0678696f9a508beebe7a520da246222f1d7d548bd5109936fd0468142ab0fd2'),
-      (129, 3, 9, 49, 25, '96adf5b36ed4c926f678f8687efe3d2f2571934be03c03794408d3fa00d5454d'),
-      (129, 6, 9, 49, 25, '158d48e81cc7f02260d945d6615ec49a72ae682f922e9764bf25b756619d5997'),
-      (130, 0, 9, 50, 26, 'dc9783435c2ccc2b0626213998071c3341ecfee0d52f2b487aa4fd3d5823e499'),
-      (130, 3, 9, 50, 26, 'b06f13000bd8afafb08d463b8d43845f36a7e2ae6493bdafa5a21e541284b39f'),
-      (130, 6, 9, 50, 26, '1efe932891f4b4cc748465ef9a198424aed5b95300bd12bf4735d0180ce772fa'),
-      (131, 0, 9, 51, 27, '88fd1b8d82ce09fdc4fa2373204470d1f2162a9aafa9dfc0d8f59c318b3d03cb'),
-      (131, 3, 9, 51, 27, '9b9dfde71a3d3e0d404fd3b5deea9a3c9ade394b80364e082a161667d3a26805'),
-      (131, 6, 9, 51, 27, '66dee915908a109016ee0b45f8463006434395dee206f5a24185bf88a786f775'),
-      (132, 0, 9, 52, 28, '91f610f5a189487a088b8904ffcb1501ede3990344cb6c4e1dce5faf65c46c69'),
-      (132, 3, 9, 52, 28, 'b0d3c4389c4fd23ce7cb066068e49ce4dcf55225c1a9089e042d9d988a34391e'),
-      (132, 6, 9, 52, 28, 'd051f8b150c170d97f9d3dd0d07adee6ae8c243752ba0fd332c390c5f20ce005'),
-      (133, 0, 9, 53, 29, 'f46631cc554116a5a076770d3187fb544ee9556b3ab5ac8d536cd5b374ea5254'),
-      (133, 3, 9, 53, 29, '2471b4ea9fd24f5312213ac725ac9c701b7242f2248ef148ea438d8bc7676d21'),
-      (133, 6, 9, 53, 29, '6b2223b87893842ec5ff2adea74a8df84a288962452110ec5387e09ff5fc22ef'),
-      (134, 0, 9, 54, 30, '47a7fa0f198ca1283ad679c4d1033cc58d3d68c7920a1153fb6ccc6c905f79bc'),
-      (134, 3, 9, 54, 30, 'cbd9d7ba7ac6a0cd00972c8960b4c3c56cdf3a526a26eb1f3bf4db3ac0e0021b'),
-      (134, 6, 9, 54, 30, '3ea3461b2cfd3e59628adbff596af8596353831902831d3dc881669ecf308ad1'),
-      (135, 0, 9, 55, 31, 'a60f50d4ea6570811280de3f6f124944c323a45a396abdee4948c6632e82ec0d'),
-      (135, 3, 9, 55, 31, '5c46abcd1056ddc25849c55881fe597549d248694bfd460b9aedad80b683e8af'),
-      (135, 6, 9, 55, 31, '8d4d881a9015e4954bf88f980e4ce142516ce20cd16c0c80e748d5d612de563a'),
-      (136, 0, 9, 56, 32, '89f05ca7b5718dca2e25a191b97dc9c3649d17af10ed70f689b4efd4df36de75'),
-      (136, 3, 9, 56, 32, 'ddd62bdba7747b0bb814275983c1d3d199e81c69c5d0c63eeea389d8483d763c'),
-      (136, 6, 9, 56, 32, 'f8d4dcfb72adfea7fdf67f99e8197ab287a53a530e686a76f10b891118fa6102'),
-      (137, 0, 9, 57, 33, '6397dea6638fbea535b505c3e128568433529179e36b5138a71b97a84616fb13'),
-      (137, 3, 9, 57, 33, '8b359f6b8f7d578f71046a9a0f6f7d6048b34004e347e4552f35398954ebbef1'),
-      (137, 6, 9, 57, 33, '4822a7d54d985b6eb7969ab61742660c94c0865cc8c681dd46e3e56396dbddda'),
-      (138, 0, 9, 58, 34, 'ce2ba1215c3989db29bbd18b70b89a957ee3ef6724931a02f0d11812abadf750'),
-      (138, 3, 9, 58, 34, '8e6a831e2ac4655c23f10faad7bb41efc241855d0157130771babdf2168e3e3b'),
-      (138, 6, 9, 58, 34, 'ef20dd95316b9a36fb28f1aa7bbec5af4c48e0c04086cc6fc663ca0f2f9f17b2'),
-      (139, 0, 9, 59, 35, 'f2855fe6addd308c361344446a74e8ab7d300c13f2802847de1f943d87066dbb'),
-      (139, 3, 9, 59, 35, '91594cbe5160d1408e18ff80395fd1973a8e04fb449fd5e76e6d84b13c26c239'),
-      (139, 6, 9, 59, 35, '238bcc44e4a01c519d442cd541378692055931b686e9f9f39ec884bf56f4484e'),
-      (140, 0, 9, 60, 36, '46b73e4ed410a8ef7d923b9e97d838c0d3ab34a9578c73195a2603a42f3eddfe'),
-      (140, 3, 9, 60, 36, '454d959e36c2d66dff37e0ee125bf5149d5ec99e7c7a6b5e66cd919ac141a1b2'),
-      (140, 6, 9, 60, 36, '73ebd93d77fc7e5c478244a09fcf20758f1698fab6c7f2c043b123d201da8602'),
-      (141, 0, 9, 61, 37, '58836f681640b9cb9908c4c092ca88ae98528be5722fdbca05496f4b642056a9'),
-      (141, 3, 9, 61, 37, 'a6503d912dc387e9e17b256ac5cab5e4c1cc83478aa78c5fdc85a7d82a0b671d'),
-      (141, 6, 9, 61, 37, 'd4fbafea5dbb2a94c238cdd21ed6390d931961cabef515b494d26431deb94943'),
-      (142, 0, 9, 62, 38, 'e4292486761589b9bf2e0117b1f3d8d1b37e1aa23232ed1bdbc205ea8a8c8568'),
-      (142, 3, 9, 62, 38, 'b8b45d624d11852c0cecbb65a2dd67d0f983f40a41f3cb6446772b14f83a3fc2'),
-      (142, 6, 9, 62, 38, '8f00a058a9cf87f1d85e38f321500dcdc5e4c703ec24b077ca4eef24521ee5e1'),
-      (143, 0, 9, 63, 39, '3fdc5619e34a0124605d6042d9c090883bdc7d7474d5d498e34eb086be1adabe'),
-      (143, 3, 9, 63, 39, 'c1b310b8511007cfe6ea5a61502522efa2f25f071665c2ee7bca8b84086972f0'),
-      (143, 6, 9, 63, 39, 'a7fe2c0b8c42aea06d2be0f225d2d3bf602e544f7f1d3e6efe8c39b39d881df0'),
-      (144, 0, 9, 16, 40, '854d91b38378ab632657e5d9ca58a9635801152516274233485e2fec8e2b495a'),
-      (144, 3, 9, 16, 40, '5accfaece944999a6e50408cbafe2e5e4f62fce297675746a017a082e37d9789'),
-      (144, 6, 9, 16, 40, 'c46ff1baa17dab3754b5c908f610739f857a0874dfbb3883ef674dfc41dc4e16'),
-      (145, 0, 9, 17, 41, '7a0acb97bfec6101e4d13a4d031659da5a66947770cc1e7db13746c789451223'),
-      (145, 3, 9, 17, 41, '4e0300f2ef8cee202a62eaaf6b8d50dd28c7142ba593604b23d934e48dd23d0d'),
-      (145, 6, 9, 17, 41, 'bf6e8464fad2dd74464eb5a64ee9fdcc0271d8a3466981f00056b58982fa0522'),
-      (146, 0, 9, 18, 42, '8a36a5f5289c255e889f0296aff90b3f64fe446e7efa6d696d25b0a975383221'),
-      (146, 3, 9, 18, 42, '358b7d1e4cb9501bc98ab47eaed37e265767577cf64ac26af37065893395106a'),
-      (146, 6, 9, 18, 42, 'e3f84ddd215b822d08a05431be3466ae8eb647b2e8f2153e677b2957a14111d8'),
-      (147, 0, 9, 19, 43, 'b9a728f739687b4df1b4d469d3e89ac5172ff414a10c8bdbff3f1427a0491d66'),
-      (147, 3, 9, 19, 43, 'eacb57c058886447d2a7f8aa1df0db16467c3dda7c18a948309abdf8848a3b66'),
-      (147, 6, 9, 19, 43, '1bbd76e3093eb414d8248d4db061daa78b17b5d4fba68197c0ce16f8bbe0206a'),
-      (148, 0, 9, 20, 44, '48708ca2c6a9c2c233e22f24d79d532bcc0abf04efb97c1f9584f01a91d60226'),
-      (148, 3, 9, 20, 44, 'd8839ff4c6e092f71e364702f81cdfdf3d5c5d43616932959c1955397456b3dc'),
-      (148, 6, 9, 20, 44, '0e05bcf92896d3749aa7739a2c74fa33d031decaffe34c1bfba8ce5af3808fca'),
-      (149, 0, 9, 21, 45, '666288b8426677f15d17b89a6ed42b804b1abfdbc20a071d19f6b626a6915042'),
-      (149, 3, 9, 21, 45, '69b86ecc24abda6ed93009b7584959c69ad0ba748cb6d60b2ce8c38d0b3067f2'),
-      (149, 6, 9, 21, 45, '41b98855fc6a7aa341585318d7a628cacd698280d73454dbeffc6d3725f2778e'),
-      (150, 0, 9, 22, 46, '023b29cb1272dd8bdbd7ad0c94e810963eae76f52e226620ce0f2cb15ee2af96'),
-      (150, 3, 9, 22, 46, '0d480e526cf4eec01b5be1b3cade05b93b4c89ff1ecd3ad6987cc4ca677ab46c'),
-      (150, 6, 9, 22, 46, '9a3f284aa1f5f3ecd4a6e893f02bfbbb801b5501a209366e8471b8eb164e345a'),
-      (151, 0, 9, 23, 47, '4be12806c32f427297e2e77fce908a4ad6f70a227c7d240186f1e9d4952ca568'),
-      (151, 3, 9, 23, 47, '30021c114d8e2a17a0e43ea68e9c5618567c06850e0c681003c51765d7a58553'),
-      (151, 6, 9, 23, 47, 'a9a42387a24bccd094ba1ca3083b0761b1272bbe45308c0374de11273503c2be'),
-      (152, 0, 9, 24, 48, '99bef1c6008b8956dc283dc7cfaa83261db4fb0641a23392f0a20d52ea88df10'),
-      (152, 3, 9, 24, 48, 'c77c50ac59c65c375adf5d040f1005c91ab81f63effd8487f1ceb802f54ca1cb'),
-      (152, 6, 9, 24, 48, 'a529e8c51871daba2ebcd2ce3520bc431bd50a3bf562ae3ccc6a9113056e8d61'),
-      (153, 0, 9, 25, 49, '8c14193b071d97bf0278fc03cee2f1987c79fbe9c7299d494ea4485cfb7bdba8'),
-      (153, 3, 9, 25, 49, '6df9b269d8a230e653bd3b95db4a56518f40f3c6ab4f95d2312c5cd36765d0e8'),
-      (153, 6, 9, 25, 49, 'f20e43b0bad6857764ec93a6dd7b57802e65e3a5c0ff41e6d70fb0278dbb31a3'),
-      (154, 0, 9, 26, 50, '6708a3a3325f5ba022cfe29ba63521cbd7787503b3fbcaf25d9fdaa26796aae0'),
-      (154, 3, 9, 26, 50, 'e27e203c9a5c44f0989a4c5ef083cb10ac75ffc031d29e3fac6fd892abd0d554'),
-      (154, 6, 9, 26, 50, '1cbb739a11527c981c4848a1ee3c1463a1ad075832ab616bcdec59b285e878fd'),
-      (155, 0, 9, 27, 51, '9bde9940d9a90451932ced1657b2267374e7416a77847ab9ff4acb831853e31f'),
-      (155, 3, 9, 27, 51, 'd421af2b7966ab80f52a4d893495a105f47d20cb4aab4502034a14e3e2747d81'),
-      (155, 6, 9, 27, 51, 'b676ccdfc0ec34b1db5e5b6cfc32767c89fea57ab04d94e1835a9305ef28b47c'),
-      (156, 0, 9, 28, 52, '34f0bc3a0298e59304aa8015061eb79929ac4db607cb04cb4f94d9b40446f3e7'),
-      (156, 3, 9, 28, 52, '90b13ecfcdacdafeb2e769ccc6b01412d5fb5ed36766eee93f1bfddeb767a469'),
-      (156, 6, 9, 28, 52, 'b1c14d89cd9f624e6452a608252d13fb1530ed3248ea841b058f0c0338999b29'),
-      (157, 0, 9, 29, 53, '430aaf82302e710d865221d1d33a683b69844552269a4e4352bfddbe49e103f9'),
-      (157, 3, 9, 29, 53, '6c105b210ed581820ab741a5b45b732978dcd048520a0ee646563a6da23f6f6b'),
-      (157, 6, 9, 29, 53, '7fb5d730339ac3a700913d2aa5a58004f97cdd278e24b9fcdb1fc0972e3df639'),
-      (158, 0, 9, 30, 54, '04a33a142bf870e3326a07077655019c2e7c6bec2e3a6a245ce533e1e7044057'),
-      (158, 3, 9, 30, 54, '1de5c714e22f228e9a2338d732823af9ea25899407702f86f5f1ebe35859eae3'),
-      (158, 6, 9, 30, 54, '5b3ef24ad8c99b18bc64313066b26ea16968ca50b564eb8f0056e9244481cafc'),
-      (159, 0, 9, 31, 55, '87c1d22fac0d7eca27cc21e25f3e6c1af5998b8bfb5f2b876dca34cec08f361e'),
-      (159, 3, 9, 31, 55, 'ce3d4dfc97428b1fb9eae7597c0b646fa8223d9fe65f3cd845fc62a4d8132a23'),
-      (159, 6, 9, 31, 55, 'b5602d51f0a3e00b9577a42520f7662c790d86a5307260e37608793cca78fd05'),
-      (160, 0, 9, 32, 16, 'e0a35bc714cd764998c5547014941b146c21408f571da1202f2350fa1c2dd761'),
-      (160, 3, 9, 32, 16, 'b3f5e1ad3af1f073a184445246e248f8a939466e07b957c9c274d49c5547d966'),
-      (160, 6, 9, 32, 16, '7b24fea10e7e3aa739032673de0586e9473dee52f502288c006dc81336f06888'),
-      (161, 0, 9, 33, 17, '5a777ccee7ca0eaf9c9ac97bda5bd9a9f0e528f45e198e6e4341faec69812fc3'),
-      (161, 3, 9, 33, 17, '04dccfb296569aae6a7026a9a71fd2fd97f1504d19152ae8641d4c51ce8b1be7'),
-      (161, 6, 9, 33, 17, '6972a403cc230425a389105b37c86afe6e0d1ae450974fccbf6f1dc5d69cc5f1'),
-      (162, 0, 9, 34, 18, 'ef63944ea095a0106de03b307b6f8a35bf7b1d92894b74ca8589445a9fed2ca2'),
-      (162, 3, 9, 34, 18, 'd22df0be0d4e0031f055b487b90a55381d46e91771ef88e4c0ff907104d7cfcf'),
-      (162, 6, 9, 34, 18, '883c1be846e76e42b40cd1dcd0c67da8fc08b88b67f7dd13723e608d27a85942'),
-      (163, 0, 9, 35, 19, '4ebefba9b3682d9507014ef62122c6e4a65b7394ced5e5141b7c08c5867a2b7c'),
-      (163, 3, 9, 35, 19, 'e2e1bbd3112e48f87f51ba696672891a5b33f6aad625899824e6329000e90474'),
-      (163, 6, 9, 35, 19, '6db346e7c6bd5d7bd3fa607ed0e1bd4e55eee0016382a7f166edbe2b0c388836'),
-      (164, 0, 9, 36, 20, '791b9509a47bf690b323c6b994818254c513f223a6eebac61204fba4dc1ef99d'),
-      (164, 3, 9, 36, 20, 'b81f1a7eb40656dbc7f5fd98422e58ad287844da99d28ed7ac268bf446c72481'),
-      (164, 6, 9, 36, 20, '69c7cf5dda6408124ad93ea4ab62065e1a4e56b839f7d4599beffcaa7796af04'),
-      (165, 0, 9, 37, 21, 'aed4c8d5d8dda50697b48ca4d60b1a4fedb9b36543d79bdd14605fcf67622b5e'),
-      (165, 3, 9, 37, 21, '5de11c2623840d63e0da14176349ec58951d148dd41ae33ce227ba2d63876ba9'),
-      (165, 6, 9, 37, 21, '41985a2a8b1c739da387274481d07e1b6f2e9bdfbae18cb2a3286263b6811f34'),
-      (166, 0, 9, 38, 22, '3c750cc0af217c543b90cee4e4f5ee97b4a483f50be59c21679a131a1e1c8de6'),
-      (166, 3, 9, 38, 22, '74b7add77748ce6e46e78ff873d83b53c51b60853bec96bdcf7946a1c80e2ce2'),
-      (166, 6, 9, 38, 22, '687f60830079bc7f6e640a1fe29d101942d7db1e9a52cec68a0ac40c53b89f8d'),
-      (167, 0, 9, 39, 23, '19153ce751821b62c8a35ca56bcd8bf49c993bde45218ca4ff14b1cb9de81b23'),
-      (167, 3, 9, 39, 23, 'd7919b318a30200d205d44b09f2447520bdd56210eb545bcd8bd53cf20d08d3d'),
-      (167, 6, 9, 39, 23, '2bebc852a265e0667cb9a95891ac4b0729702883f91abf9aaf166141a6eae0e5'),
-      (168, 0, 9, 40, 24, '522540d1918e63655ddc7c31c0b50e2deae3a2a0f0bad46caa9cf7c4dd9bb401'),
-      (168, 3, 9, 40, 24, '8fc6ebffcd2a8471dcc8b6da71e86facd7b6bd5a23d3a94a84fd89a0d58ae831'),
-      (168, 6, 9, 40, 24, 'e6b7103c3b9faea4bc0668b8e55a7a0034657d1ebd3a03b32207809951f9919b'),
-      (169, 0, 9, 41, 25, 'a8ac162a314b1fd01d0ab17eadd28a754453fa75242c5e465d744796b80160f1'),
-      (169, 3, 9, 41, 25, '6ccc1d5cba939ec970b681e52be3ec84cd2eef3069dcb4d8e72a482394fb983e'),
-      (169, 6, 9, 41, 25, '07765646b12e946d819353baaa561d12d69cd7f6823d805c4ed5eab2f5adc164'),
-      (170, 0, 9, 42, 26, 'd040bf1de52d1cb6f6d1f8a29cafedebc406fc95b445ac531c3b974de0a88788'),
-      (170, 3, 9, 42, 26, 'add81168dd14ad71dd31c37ea77fa533923f0b7f8a5a9b6e9a4e61fb265c2645'),
-      (170, 6, 9, 42, 26, 'dc7f792b624570e247166c83fb47d79e1fec11062df267ec5c71789e938eedc8'),
-      (171, 0, 9, 43, 27, 'e2418355c1de8fdb648543164090ca69657a47181ec0db4a8bef69e894194a98'),
-      (171, 3, 9, 43, 27, '75a27622efd5edf20f1229e7cbe4584549e65ec16bb5d0da0863c5826870ea96'),
-      (171, 6, 9, 43, 27, 'e8a76663393d598440903ec937be71f090c5a11fa3e14ef30f6e48d121e765ca'),
-      (172, 0, 9, 44, 28, 'cff4bf516f9ad7b66a09551f5d0f34e6831e385b9f17ee7f48ee9c055dcd9e5d'),
-      (172, 3, 9, 44, 28, '628d86d609e7701ea9ab945b62ee9bc58ac1d800ba2532f143d92f4ca4b0e9ff'),
-      (172, 6, 9, 44, 28, 'b33bd1ed4596bc9c33c107a5b3c531aa2403de0e3e2c3a4caafc90eff10707c3'),
-      (173, 0, 9, 45, 29, '5605688f135e182aad3ba733521b5d6c6ba27193be83a3a42284b4266d63b704'),
-      (173, 3, 9, 45, 29, 'e3d709d932c6aac677bef17cbf0367c0f77fdd44072d5c4d91601301e4846e47'),
-      (173, 6, 9, 45, 29, 'f6f348d9418867696e85e11035d02470eb54570d55765fc1f3f109a026740567'),
-      (174, 0, 9, 46, 30, '08bd66738d33dba5721ed09f0f75233bd8aa9b77c2d09539cc5ca49075d855c1'),
-      (174, 3, 9, 46, 30, '965a33c5b55db31247859252a0f5be5a676e987c9a7ecddc556a809e3c6f205f'),
-      (174, 6, 9, 46, 30, '58c9bc88f0050bd085ed5b1e2ee3b891816a3735ae3a56365f07b079f77d2d83'),
-      (175, 0, 9, 47, 31, '5ebb0e0ad2d731542a75389e04758f8e5eea5d6485d3e84c835bb5d961118c66'),
-      (175, 3, 9, 47, 31, '50d3c55775ec794da63a89ffd6487371d1275827540323e97a4bf5a5d8cce133'),
-      (175, 6, 9, 47, 31, 'a302f423964e198a9cbf25dcc5bddb4df3aaf13fc586efb2d333fa26bcebbf36'),
-      (176, 0, 9, 48, 32, '66b0078eecbd6b5e7fc8668228fd0cffa9523ad0c8046719375113e859a60795'),
-      (176, 3, 9, 48, 32, 'b855c1c97f01a835d1c864e1fd5c72e5ccaa4ca9c55ed46c00bd3c44b1f1264f'),
-      (176, 6, 9, 48, 32, 'ca72c7bc78d2dd2eaa73cbab85d742e245c25ed73d80c4e5c7a2d7d2cb89287b'),
-      (177, 0, 9, 49, 33, 'ac32082281603e511ab07a0458d5aa7d7a2f770560e9136647e40df6a140852b'),
-      (177, 3, 9, 49, 33, '959d0ac47b91e2b3d12fb0649849ea87e139c882922664c616b9ae0b45072ffc'),
-      (177, 6, 9, 49, 33, '4c8745f598ae6e2af551c49ddc9c5799f762d505a2b7527303b309150ece87a5'),
-      (178, 0, 9, 50, 34, '17e9fa05bc58beee4e5ad48ec9587587c47fe8bd9e7807897454e6bcb555f460'),
-      (178, 3, 9, 50, 34, '267ecc087aa1e9063387f712507ea38c0e2b6979487cda1549cbe6807d4dc5ac'),
-      (178, 6, 9, 50, 34, '43353835be308681d221cf36fab8ab621ebf2ac16ba6d2d163aaaf80320b5dd7'),
-      (179, 0, 9, 51, 35, '307b0e38049a2ec51137149e77704847bdc01e81d1753fc72b6a160994d3b371'),
-      (179, 3, 9, 51, 35, 'f133f12f0f73e0b76d931e6e784d43570d4ec767841cb6c4ed810423a29d1484'),
-      (179, 6, 9, 51, 35, 'a89fb4c595ab26c63245d449bda0eb0ac77d79ae3bd91214ac29c7dc59905716'),
-      (180, 0, 9, 52, 36, '3ecdaafc7b11602f51bb4de491141d5430ac621e41b3a00ddbb4cbafa0da9808'),
-      (180, 3, 9, 52, 36, '40a10e2ba6c3eed83aae12780ecab12ddf7f3aa41186cc8a59b61809cb8290b6'),
-      (180, 6, 9, 52, 36, '2f1da7dfa5975422c8b35170215b50a7e683f60bb1370aa12d172daf6486b559'),
-      (181, 0, 9, 53, 37, 'dcb9052f06506f5c398d6b49385d225956e94df4913338a3422cf05556618d25'),
-      (181, 3, 9, 53, 37, '9a7fe91317f93000af10f020ae3bc033374af4ba2eb0e514c08bd2cc4512cb6f'),
-      (181, 6, 9, 53, 37, 'f751d8b65852b28bf2075de2c4c48f2f459ac28345e09d88e908a2b9230cdd35'),
-      (182, 0, 9, 54, 38, 'ad94272f6eb009d19d66b0cc7e6cefcc2e2c2724b14b4a516c843d4117f5c43d'),
-      (182, 3, 9, 54, 38, '5a3950e5b083d35231657f506cf47fe51d18e4990d95f5808346b83cf07423c3'),
-      (182, 6, 9, 54, 38, '32e88872f4a11cd8378db957e76a372f9a0d40fd88f29ea05312e00acb9e8ad0'),
-      (183, 0, 9, 55, 39, 'f2a5f3ee2763ecdd2814bc00b08d032020b5515c37bce3139b98fcc101e82a9d'),
-      (183, 3, 9, 55, 39, 'd38d4178f28e0eb05df863bacb1a2e9d6242b02a19c747a0768db83eedb88613'),
-      (183, 6, 9, 55, 39, '20a696b6a22e16d861d00f3d1331677a2591eb00fa287ac02c6f0c11d93a60e2'),
-      (184, 0, 9, 56, 40, '8c8aced0b731647c9400bb35bf02cdf81420bbabdfbb31495fbe6f6ebfda79b5'),
-      (184, 3, 9, 56, 40, 'db658a773351228926445ef11f9a6a595a2730409ab618b8c4d6b93e5e9b9cbf'),
-      (184, 6, 9, 56, 40, '4ddf345dd6721c5ca1d1e055f3b619e44059152e3fc15febc3b3336bfe44b47a'),
-      (185, 0, 9, 57, 41, 'f71ec99c8bfaccee75c8993f4935d66d8aa3fda12fd622609483e986ef4b1c54'),
-      (185, 3, 9, 57, 41, 'dc8b8ff63f3b281a39bd6b58cd34b2df1f821a3f511b30f2463b98a2b8295617'),
-      (185, 6, 9, 57, 41, 'c2b777ef570f0392284d044e0ba6ff5c63a4e62319ed115e7664bc09957f9b75'),
-      (186, 0, 9, 58, 42, '6a4f990596843148edde8cd776f36d83bb7b0daa66eeb64d2ddff07db968138a'),
-      (186, 3, 9, 58, 42, '95c087e32829c648e7f0b2c82f6f6f265851bb48503ca7d3ff30a69a8ed72f4c'),
-      (186, 6, 9, 58, 42, '88a5ad0abcea2dc2418ffd5fadc5f4182c5909d9a0b95aa10e0da4db8439a2db'),
-      (187, 0, 9, 59, 43, '33af2c4dbfb0dffa8a3cacfba0259a1a78299faf6420a85bea7cf632b2660d59'),
-      (187, 3, 9, 59, 43, '82c5b98e7a840bd25419f27d4bf90b2009f70a5ba041e4f3b17be4f24846bd83'),
-      (187, 6, 9, 59, 43, 'eeaeccab963a418f5bb45de305aadd2d526c7baae8fcc3e2891010366ca2883b'),
-      (188, 0, 9, 60, 44, 'bc8611c98ab49006cd9a23e6dd5b2749d17fbca39b9b477a7828dedf8d8ecf8b'),
-      (188, 3, 9, 60, 44, 'd8765be2559b9b2af8c2ed006115725bbcd7ed35a82edb2ac0b72cae0a3d78d5'),
-      (188, 6, 9, 60, 44, '4c9c819d9b2be6c0434fd75c6ab6a18c8cbd34d588a890612f71ff9702520cb7'),
-      (189, 0, 9, 61, 45, '61054aabd9255b0b9e27e4b83e1d5840a7b87808595d464018f979c84402c44a'),
-      (189, 3, 9, 61, 45, '471d43e52600250f00715113d1b97e3c307bdd32782367fc1e8026f006864abe'),
-      (189, 6, 9, 61, 45, '2ece890f7de260b754c106b54b6e87cc634cd9c37da24858cf6941db4b429f0e'),
-      (190, 0, 9, 62, 46, 'c7519e480a7d27602bc8a47be1e744a41996da7761219de3beb3694b082fec52'),
-      (190, 3, 9, 62, 46, '373accb0427566340a08ca19b06faca4e91faf96c63e77391011cf01785960e5'),
-      (190, 6, 9, 62, 46, 'd95c0525c28036be6cc19be05066fdaff6f795026922cd6c8764b4add7cae725'),
-      (191, 0, 9, 63, 47, 'd4e8200a4db7d40dcf0c1eebf8c152fa51f4099a2e052d820abf1fc3268b5e99'),
-      (191, 3, 9, 63, 47, '21727486ddaa5e3bcdeaada0c9a7810ca53a8d0cfef494890deb8936cb39a98b'),
-      (191, 6, 9, 63, 47, '0b4ae64c9a88e203ae28672c71256ce071afbddfea54de8a04b7958f5e5a64fd'),
-      (192, 0, 9, 16, 48, 'b21da1aca2129bed84b0ec8a134a3dba9ba8b9589b6cb544ae3d9d4a0389ec4d'),
-      (192, 3, 9, 16, 48, '077687d07b4dc4c8e8db116614ec65e45f5b804e9d8b8c2125f43a6d84cd7578'),
-      (192, 6, 9, 16, 48, 'd5ec8cd2d9a9ca4f817ce2575a5c5ceddb108f8f4deca17448cbe35f3b7bdd6e'),
-      (193, 0, 9, 17, 49, '37a6611d3c442b9db098a22007489cecc37ebe7baa3ca8b9406fff07641203c4'),
-      (193, 3, 9, 17, 49, 'dc1a953491ceffc5bfeba4b250cf335e61f9e5acf7ccec9c698602c495d1502d'),
-      (193, 6, 9, 17, 49, '122fca39f532622a85d8be67ce04a1541935961016ea4dc0b1fe62842461075e'),
-      (194, 0, 9, 18, 50, 'd595933d355772bcbc76c45b679e15331b1f5ed90a9eeb82b92990ad32755048'),
-      (194, 3, 9, 18, 50, '24963d4262d76b41496246efb25c5a7c4b7b2b13977e6b21ed03a457810276a5'),
-      (194, 6, 9, 18, 50, '4571302b6bd8b71e6c95a9ed6ab6c10e82eba9b88d25da6eca71c25da893860d'),
-      (195, 0, 9, 19, 51, '4e636533f79064df91abb12229aef36d9185d62136b6c7a07d0dd31b397a41ca'),
-      (195, 3, 9, 19, 51, '009c6aa586bb3cec1f6f87a60d210883030a6dd8d657d97a3fb3df655de80057'),
-      (195, 6, 9, 19, 51, '33dccc836838f6172592eda9ac151de28822e4ab8219ce25a45da295e19a79fa'),
-      (196, 0, 9, 20, 52, '621408443c9bbb93e7b4eb2fa059639a780def34fbcb888ad5365270beae7c64'),
-      (196, 3, 9, 20, 52, 'b30cb805c1b361b6c11cec409be889fb5fab543cf9c1f5089cf3b30defbc7d7d'),
-      (196, 6, 9, 20, 52, 'f7eefc6d1c9314697a88302c6c34cb3cae948b31aef54711a83b2e341e919408'),
-      (197, 0, 9, 21, 53, '61d895a98916d5ce627142b88f59e75e70cfac8c55f56553d51978c7460514eb'),
-      (197, 3, 9, 21, 53, '8c2548342b033bfc92cec5920c0f056d5cb3eb760d9c9593176c3ea65ed3de7d'),
-      (197, 6, 9, 21, 53, '5137168b2ba622130779c3e43bc9fe796048563720fcbb73ab84c18d3b5681b0'),
-      (198, 0, 9, 22, 54, '3071e8f3433f85d501a9ae93ec0658b3243fea03a46b1f34b311be6d5342da11'),
-      (198, 3, 9, 22, 54, '5083fe8d9f33bc77ecc094fdfa9ac43e074d0aa15fc49aa788e73c7076c393bd'),
-      (198, 6, 9, 22, 54, '6701de08fefdda487bb3ee82d3583acdbfc6cb74614af879e3edaeb3f093de7d'),
-      (199, 0, 9, 23, 55, '0d8c9ed72e345c80a138e07972bd9184f6745926fbd6c0406145866ce1f3d034'),
-      (199, 3, 9, 23, 55, 'cdd7f8ec2475bec5d54931c7f3ec6419ab67cd27f6a0bcf4e1b0c2e1b380cf43'),
-      (199, 6, 9, 23, 55, 'af522f6271683b4a82bee1f522b1f66c93f5a54a99b0e4561a4bd9f89a76f8ff'),
-      (200, 0, 9, 24, 16, 'dd2ae60374932ea8924ec2f0bb4f05938d58b859f9e7994dfdd99a2cb89818c6'),
-      (200, 3, 9, 24, 16, '5f0d21451e73767d53b53db833b0d773ce5b9ad1d12320127e2b3f716ab7e80d'),
-      (200, 6, 9, 24, 16, '7f376e63689b213474d3e5bbddbeb23fef096086fe16eda441bea0d418425d72'),
-      (201, 0, 9, 25, 17, 'e621cc59a48049d835c0d191dd79706998ba7d0330cedf79c9f05ea6c664c663'),
-      (201, 3, 9, 25, 17, 'a12b00dade1534de3af7ac679b8534956443226ac267bba4a5466dda3a72ca22'),
-      (201, 6, 9, 25, 17, 'd95191683df1eea8e2a5773e04ae0a0fe5dc360c4bad52699d348e24d415de65'),
-      (202, 0, 9, 26, 18, '16c4c65dfc1982edbbb9dd4e22db3e5418dc979c396d266f70547cf6433fd4ab'),
-      (202, 3, 9, 26, 18, '61ba96cc68733ba7916c68dbe61df1e4acd3c0682e4609dbb25dd9c30e60ecee'),
-      (202, 6, 9, 26, 18, '14fb5b6f8d3a07d3297dd5d5e785a1bcf8ebfb34c3abb4cbec7c02811a9b3d58'),
-      (203, 0, 9, 27, 19, '8a6a6fce27594cadf91a619bfe15861f272f58b3660094efd585d11871f5ff5d'),
-      (203, 3, 9, 27, 19, '4fa2294d4e9a23b6d773131bea5ef3856c32281f9aef5d0d93bb1afb2f1956fa'),
-      (203, 6, 9, 27, 19, '062299a64181a10f419fa1954dc7a17fc71e5473e6f289753cf9a70abda0263e'),
-      (204, 0, 9, 28, 20, '626169b423c576383e13f62339e2918cec0751bc3cb79cc2cd744c871547664d'),
-      (204, 3, 9, 28, 20, '341db0a065d9509df83ee13b211d94b99f2377cef0403b0a6d472f5a9b3accaf'),
-      (204, 6, 9, 28, 20, '9efdb30496a04f8a86bf9b4583fd4a7463917614bfa3bd2e84c0ac1b277d63ee'),
-      (205, 0, 9, 29, 21, '0fdae589dcea0cd7fcbd5689729b92d9a1313c447c0425d0bc99d44ed412c47f'),
-      (205, 3, 9, 29, 21, '1185fc2df63ff37db9f26f69c68e1b72480cb864ec6ce94d26d9242c433f701e'),
-      (205, 6, 9, 29, 21, '6e4e61995703db009498044f81c460e1c3b107f76f06988408da351363c949ea'),
-      (206, 0, 9, 30, 22, 'ee3f02a6f9c59309388ebfee97e6282976b09596e64d84d132f1106c5ec09c35'),
-      (206, 3, 9, 30, 22, '0451a510b7d38bb2321818fb784bf6992fd5396063fdf85e427a456e240b10c0'),
-      (206, 6, 9, 30, 22, '1a69085b9f9ce3d5da5afc2dfc6ca966c53178b933d813d871b0e2f52ca75429'),
-      (207, 0, 9, 31, 23, 'e80d78aea5531da0c019ec4df0623eca63ab967775920c6d74c6957bb022d665'),
-      (207, 3, 9, 31, 23, '8e5a21a86c737bc8611cd693b704dc1fe0c59ee09dd97f3a663e9b0dd25de3b2'),
-      (207, 6, 9, 31, 23, '9a20c3ed5964c21c954c216d4b0a5a0a93da6dd69a2b2b54116c7fbdcedf5f70'),
-      (208, 0, 9, 32, 24, '4b80a9c0ceee833912b21d4521cc39f87e8144c96820a8fb3e4292aaef493d4f'),
-      (208, 3, 9, 32, 24, '3f06046ea8814b41b78146604572b3d2922adf2e593e640b2b97de57731d8e9a'),
-      (208, 6, 9, 32, 24, 'de2a7585d90de23253bfe5d05487195414fbc983745ce6e17da79437d6747860'),
-      (209, 0, 9, 33, 25, '3c5d031fd21f877123a6df8b6376833ca121582b92fd72e87a9481e022cbad12'),
-      (209, 3, 9, 33, 25, 'e85f4c93d087c209071932847fe835cd9e241776bba1dfb5a3bb7d67512ea4b7'),
-      (209, 6, 9, 33, 25, '4edca250ffe50c29d42f3a7e6dfb9df07d6a7a094ccec7017c8b05ce7cfd13b4'),
-      (210, 0, 9, 34, 26, '85124242095bb59169c700737247fb8171c8bfe27eb164b887fc3e92ab394c37'),
-      (210, 3, 9, 34, 26, '7acf5f8c6c04f4b7c1b301b59ffa48859a7e12487c2e33d3dc27b0756aabff66'),
-      (210, 6, 9, 34, 26, 'ecd9fd9824f63e056dfcfd1883ce823f87780bf5999dbe0720a2b918798e7fd1'),
-      (211, 0, 9, 35, 27, '552a613adad24ac973cd2504dd66cf7e9f0b26ae70eefdf865ba1175a12c6c8d'),
-      (211, 3, 9, 35, 27, 'c59a6f883797b584f37f3519d8cd7691dccca9eb0fe9e0ec9d2624315d9d66f6'),
-      (211, 6, 9, 35, 27, 'c7d28745c8e903ffb36c31ad3f2bbb88e147e4ddc8837df1f255df9d715c1d0c'),
-      (212, 0, 9, 36, 28, '5462828950e74d275bc9671ea8f7ed024468b7f498482a89afb2fae804fa3f99'),
-      (212, 3, 9, 36, 28, '19688b23ccdd250bc3f0d37d816d1f1891bd56b4b2a9c34d75810f664ae5fa66'),
-      (212, 6, 9, 36, 28, 'cca658cdb04b87855ee09857cc4169fd42e2ee6d902df4785873a4224d21cc7e'),
-      (213, 0, 9, 37, 29, '1e14408c7aa9c74a31801aea7c756a628c0a9f1a2bc545acbd952b10b6649692'),
-      (213, 3, 9, 37, 29, '1efebe8ef8ecee8c99cb7fc61d961fdbadbdebd33872d4083cb9f855bee64425'),
-      (213, 6, 9, 37, 29, '52197e8ae9ea8770a8008348266bd331b3d71bc7aadac8984d424a20a2da61d3'),
-      (214, 0, 9, 38, 30, '0f68c88ba384c722e4e442e7dcf600efbf669439ea5dcd93e62f3965b427f77d'),
-      (214, 3, 9, 38, 30, 'ca8069856120fd53ab93928060b945524e6a2a5380b511ceefa897a6f33ba162'),
-      (214, 6, 9, 38, 30, '798b9e87acacb59ea8fac99da9e3101e97ed9ffffb058a9ce8102c69765fd374'),
-      (215, 0, 9, 39, 31, 'e220d17fa2eab6206d38d02af5f2667b4d8a2560cc8ce973f18b2c8b3fc6595d'),
-      (215, 3, 9, 39, 31, 'aca121d8d3d360d0df00fe6f566766272cf00dbf3cd397e94dc58f58901ae0c0'),
-      (215, 6, 9, 39, 31, '5bd7551316acc9aeaf8ff2936cebfdf55f9c1c3ea1723a069a545d55449296eb'),
-      (216, 0, 9, 40, 32, '58b3806c7133d5626ebb9fbc6797002adcf7dcd4cea3d8fefc2ff8e70aaf9a46'),
-      (216, 3, 9, 40, 32, '43de8ca267748e64fd88511ae0239677af6408a42da245f710c7722cf2d51137'),
-      (216, 6, 9, 40, 32, '8b9b84420cc21af1a29c8efe4c70618b27dacdbec017931ff9b2c74990d1c6a1'),
-      (217, 0, 9, 41, 33, 'f41b5fda2e38e769808004fb7d35cd79dd0e904b5f9daad84afbed617ed25592'),
-      (217, 3, 9, 41, 33, '912be506f5c47b99a2275d04ac7c2702b9cc13db0acf1bb4a992312ac405160d'),
-      (217, 6, 9, 41, 33, '591e676784fc3f45e00600f7214c82da9d815bd10bc276aeb4b1785ec8b175d2'),
-      (218, 0, 9, 42, 34, '94e722b59f5a59f159d1a9f9f13be9ce8e4d2aa88ab01363443f8b197baae1ca'),
-      (218, 3, 9, 42, 34, 'ada5104fe470f805dd4cbd274fe14c4125c4417f1608e530fd792d6efb93a5b3'),
-      (218, 6, 9, 42, 34, '2d15ef93d716360a174860693ffc1c571687e21ff224013eeeabbe43929e970a'),
-      (219, 0, 9, 43, 35, '7df74d6bf2913999b1b2a62f7cbab368648921dd9fee750c3a2ff281f88a737d'),
-      (219, 3, 9, 43, 35, 'c360dcabcf27c605aef06a2bf72cab243d8b34ff49b7642f5435d688a714bd54'),
-      (219, 6, 9, 43, 35, 'caac45c6a0f38b8e9feee5c46746b6fb6be11ec38a812526d4e20476c2601e70'),
-      (220, 0, 9, 44, 36, 'cf6da6dadd9610dd8191a042525f891d2b9599412910be27718770d7d158d675'),
-      (220, 3, 9, 44, 36, '770dd214e58abc2dfdcd419d8435553503e32c955073500fccc45b3d7d40568e'),
-      (220, 6, 9, 44, 36, '2ffa3d8a07bc6bbb3a69c7ceb53074f369ff092592eacfe81b08b14ae2de874e'),
-      (221, 0, 9, 45, 37, '384cb527946795d42cccaadae3dbd3cd8525962230245d946272ba2340a03a06'),
-      (221, 3, 9, 45, 37, '2774c5c3cf070bbe6239704b3c90773ffae86479398cd27544a8181f447b9e1b'),
-      (221, 6, 9, 45, 37, '95d997b3351558cc193d18c927bc6a467ea7d2832c86acceb3809218a99a0609'),
-      (222, 0, 9, 46, 38, '9c7dec88e7f5c4746280fa1a1a379bc125fb7cea3092027573c225ecf9c7a9b1'),
-      (222, 3, 9, 46, 38, '047a30acea1a8db63208a04f57e7194fe1fe5170448f9dbff8e0e1405e1a6fe0'),
-      (222, 6, 9, 46, 38, '29750ce1ec51189d8bf521f696ee6d9668e02a1ad6f58f0fbcf3ef07f61654ed'),
-      (223, 0, 9, 47, 39, '3b15ef06ed77133748ddc5adc0839a9b0349387b04472f8581bbbdd5df64fde3'),
-      (223, 3, 9, 47, 39, 'f46b32c863e17513ed59e0a9bd46fae42b13866e1da1c819598e827f3ec952be'),
-      (223, 6, 9, 47, 39, 'ac41f4fd421de9fd7454c338f4cd607cc33a398986fa0edf1a860fd91183a85b'),
-      (224, 0, 9, 48, 40, 'c6b0f63595d4420ab74a0f57c107025e6c228277045146e681b26a6306f5a62c'),
-      (224, 3, 9, 48, 40, 'd8d6ceced767f38c51d71489967757a346097d7558fcbf1943bcae9bcf0ca4b8'),
-      (224, 6, 9, 48, 40, '8beb88385bd1ee0a0f2606304c3035661a63e2864c6528540b28176770ed5356'),
-      (225, 0, 9, 49, 41, '5c8dc49bbb8fc7b263c79a23e7ff725c0abaf138aff748792bd76403422bcd48'),
-      (225, 3, 9, 49, 41, '9026ea4a9f0c2b05420f936be07184478a03ef4fed39e6602727aac57a5beac7'),
-      (225, 6, 9, 49, 41, '372df08777358c6c863e0e543065d7c85b0e96683b4aa93f880c70da34e4ec1c'),
-      (226, 0, 9, 50, 42, '6b834f04cc5fbc0361c75261c63e00f81fae41275e1dc9c46f0394b25cf4c10b'),
-      (226, 3, 9, 50, 42, 'ad58328e596e6bb3546d48c917b0978ea99d2957f114bed9367c95bfe246ed81'),
-      (226, 6, 9, 50, 42, '115102301828fa7e25bbf2e92a56c308e22e2c41bcb674e65809ea9a832e0eeb'),
-      (227, 0, 9, 51, 43, '564bfbaa5c00876c064c0b31b9ccec1d8082c65cef2cfa20d1d8dee57cf1b205'),
-      (227, 3, 9, 51, 43, 'd7e1d342c60985e7edba445f4937280f5d5c5310c3db042ec644ce554b8a0d32'),
-      (227, 6, 9, 51, 43, '3e00a60e13311b6f403c79f04dc9294dff6c0652cb125bca5930eb95beffae95'),
-      (228, 0, 9, 52, 44, '9d6a3b67a87354064a75cb916b1ef04a5996f8ec0c69810f1c2ac42caa7d9db9'),
-      (228, 3, 9, 52, 44, '2751f0ce6f2261957cde6ffa18247ead464011b6c497bcd0e74a73b59ee13492'),
-      (228, 6, 9, 52, 44, '2616581d8eb9c724e8b9f8160e4d7b8179a452e0339d226aa43f34ae1c2b8760'),
-      (229, 0, 9, 53, 45, '6d5f73e86cf42990296d8afc083dc7b06dc6c34b36341410901c2479c61fb6ed'),
-      (229, 3, 9, 53, 45, 'a16842a2f0d3cc06771d0f80dc78da40b73d8b396ecc7d3f208999b5c99fdeba'),
-      (229, 6, 9, 53, 45, '27362542baa014308ec8d1b92e8a473cd68308933c39fab8edab587a5fe6df47'),
-      (230, 0, 9, 54, 46, '000649c18eb0dbbeb65bfc75859734937592c0cafa70ae93773487d4b41d0f6e'),
-      (230, 3, 9, 54, 46, '8fe265d76af9b9873fb18ac9c93d6bbe0983e1827b82d7fea782fce26ea59829'),
-      (230, 6, 9, 54, 46, '9c135f3270a390f0cb78ecebbb504cb1a4c11d9d3bdcc024280023ddb574cdcb'),
-      (231, 0, 9, 55, 47, '48bf9e055aa1838f2125b557fbcd8ae06f6beda7ef1ff1a57b3a74705ec87ffe'),
-      (231, 3, 9, 55, 47, '47a909d9cb69dff56e45cc72818149719881ff98a134a1e9d25d31e7afd83342'),
-      (231, 6, 9, 55, 47, '435092954e82cc9317dd02722d5d7b6602bd7848fd72364099a845b8fcf9d7cf'),
-      (232, 0, 9, 56, 48, '9ca7678e5dd78e555c1da2b3e42f3933e7650a412f378e47a84560c5ddeb5183'),
-      (232, 3, 9, 56, 48, '2d840dbe32d6b6c4a088ef8fb9dbc01907dfc34368383a3f9a6100474fb1e744'),
-      (232, 6, 9, 56, 48, '2499a30ae6d7d85f01d6793e11f5eadbd28058d2104a2e40b4231034863db45d'),
-      (233, 0, 9, 57, 49, '4afa6e943bf8b5a3f8ea5622000cc4f6c41564bf3a940dc0e5309fda0b44957b'),
-      (233, 3, 9, 57, 49, '2b9817fdd216efee5cda37cbc1ba197fba868725fb902ddd5dcd7ded7739bc7f'),
-      (233, 6, 9, 57, 49, 'dfe47642dd6160d7eed10498d5b1791be90947419e86a1e0f57552c575ce53ef'),
-      (234, 0, 9, 58, 50, 'bda264baa7126ad97cff34cfa2d6e1bdadc293c9b92113ee5d89378e2bc30533'),
-      (234, 3, 9, 58, 50, '3fb1a678a71eae2f46786a20bf4f991e15e295a458cee236806cd74bfb2b5969'),
-      (234, 6, 9, 58, 50, '590f8a222e555a8fdb8122992b06d4523c2fd7b13ef8320d02c2a7491b710081'),
-      (235, 0, 9, 59, 51, 'ff3849a090d5c46f90603f23295a43184e0d3fa5e57c397a4e2f79cf965c10ed'),
-      (235, 3, 9, 59, 51, '408b8337a05b27c80a7669636a55be5f03be46ab37d3afaf96f9e1e6f1be2799'),
-      (235, 6, 9, 59, 51, '5257144d7e3c51927b4d4294842d2464cc84fd3add87eeca3fa4433ad3aea65a'),
-      (236, 0, 9, 60, 52, 'dd06e20d2943d3e3b6d66f610f3920dad9f3c991bcab3378f9b831b5130a9b88'),
-      (236, 3, 9, 60, 52, '7b40287fdfeede9c714617830b9669a367b1d1dc4aaedcdd9b093d6f0485ddfd'),
-      (236, 6, 9, 60, 52, '99272dd3f81970d37bcf513798b185e8814bf7aaa85d424e141763c0d56b9308'),
-      (237, 0, 9, 61, 53, '5391a84161c686442b855de69fbfad4e3fa6d73c35c7ef6643d341326bb2fab7'),
-      (237, 3, 9, 61, 53, 'cc7b054b32594152e84678c3888af62977e5069b371fa32e70a744f268cbbb0a'),
-      (237, 6, 9, 61, 53, 'f841c03bf5f4bde1a1ea1eb8590296cc0f351d50429a9b53ece3846f572d4028'),
-      (238, 0, 9, 62, 54, '6b9daf4919308f779c4bc609711d2c16497ef3df03e097a07bcc76e66cf79710'),
-      (238, 3, 9, 62, 54, '3ecd6be68fcf2c8dc46c2f37816e9dccde8e3bcf02b0ad33b09087dc965ce5c8'),
-      (238, 6, 9, 62, 54, '5fa37f9dd8420d484b6ffab0b92a44d2dd09a5c31777825a81a3aa7c0bc75567'),
-      (239, 0, 9, 63, 55, 'f90316a1360afe18f1f9eb35a8da6e8009f734170088514d9e526c20e2ba1ea4'),
-      (239, 3, 9, 63, 55, '61e51e3e80f16da1e5c724137aa52a7b983c721dd1d9f4fb502aadf956b1d338'),
-      (239, 6, 9, 63, 55, '54dd1a09088fa043c42f23d8a71af4b984e6e3f6c73a1250a36c52113303096f'),
-      (240, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (240, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (240, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (241, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (241, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (241, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (242, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (242, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (242, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (243, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (243, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (243, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (244, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (244, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (244, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (245, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (245, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (245, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (246, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (246, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (246, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (247, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (247, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (247, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (248, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (248, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (248, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (249, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (249, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (249, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (250, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (250, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (250, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (251, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (251, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (251, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (252, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (252, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (252, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (253, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (253, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (253, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (254, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (254, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (254, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (255, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (255, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (255, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (256, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (256, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (256, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (257, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (257, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (257, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (258, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (258, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (258, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (259, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (259, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (259, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-      (260, 0, 9, 36, 36, '8e2267d9d5b3887b3155ac1c3ea2f23f34ef2072b48e7ea2a0e2d826699767e1'),
-      (260, 3, 9, 36, 36, '432f1b390e55ce9e52fde23ef3fac4deb7394d7746e84bb34b7a7fb14b40ae80'),
-      (260, 6, 9, 36, 36, '39b419cf935494540e712c2622589962f429f793305e8f1e9b6cc92a28b89701'),
-      (261, 0, 9, 37, 37, 'bef64838d49ccada5c0b459946c321cd91b0d897895270bab0e69bfe0a1c4186'),
-      (261, 3, 9, 37, 37, '241c1b8b05fbfa04d04ca702ef9491ba58d0f3b4dff52734abe5ef94cd9b9636'),
-      (261, 6, 9, 37, 37, '09fba7228703b4160dd29da3ce6a4715ff93a9c0003b670d550cb73baf034701'),
-      (262, 0, 9, 38, 38, '932db3e008ec4488ce17287f81170a7862796c650dc271cae7b0f70261dfa27d'),
-      (262, 3, 9, 38, 38, '33740f21df6eac2624d9e188ca5356ef20cee44befb496fbbb2ff0a3fe28e0aa'),
-      (262, 6, 9, 38, 38, 'cf86939424e249d6d07439c7fb5c996d689ae057b644d93c8b51dc59058774ff'),
-      (263, 0, 9, 39, 39, 'c2ce2172256dcee2e4c13d86684c37b9d633ea43599b80ee81d4a6019ffd5e80'),
-      (263, 3, 9, 39, 39, 'cba1c95fc94d5f06eb313e51bcdc6b9ab1548bf551d41b2480332795de8d2adb'),
-      (263, 6, 9, 39, 39, '7985683d280f5b4a6bb910f562537a093498bc76a447c0370dabcc5d8e3dfa3c'),
-      (264, 0, 9, 40, 40, 'ff657e41afc635ff08e0a4abab525368043258df941e1d2ed25b482b096e7824'),
-      (264, 3, 9, 40, 40, '761c108367f657b8089192b9a22176fd36d287c590d6a8b437880243809e0d90'),
-      (264, 6, 9, 40, 40, '7bd196b5358ead0a4538348c04a26344c35fadc8c083a6f86ac6d6c0a4ab8c3e'),
-      (265, 0, 9, 41, 41, 'a24bb88ed1a55a5eb96dabaa64525de563901413639d240e6151c9eedbcf231e'),
-      (265, 3, 9, 41, 41, 'c588f878a531db49cf9ea0e87876003a55452529365538955d3ab42782be47b2'),
-      (265, 6, 9, 41, 41, '1a821f7233989043862206aa25bd30504a8dde18a20032e24493a657eb2ae036'),
-      (266, 0, 9, 42, 42, 'd02923e877543df074b5efdf26a5b8065101abd185d5916d59c6a67e54a7177b'),
-      (266, 3, 9, 42, 42, '84a50ba70c76060f329e1b22071ddecc8803f7ab083bd899c5c96218ab0c93f2'),
-      (266, 6, 9, 42, 42, '1a6b741e8e1846f896fee954e422b48c30639cb0c050e50337b8e646f457e8b3'),
-      (267, 0, 9, 43, 43, '2c701d56941329b13669a9d35fcf15aca518194cf8c9bf23be10ea1fac68da93'),
-      (267, 3, 9, 43, 43, 'd1dde2f7cb06e0b1eac1c0a0fd44edbf50ab53cf2bdd94e97aede3c0e7ae5ca2'),
-      (267, 6, 9, 43, 43, '194bb921b71faf4154cc3145afc1652ee1f5cbb5271b59bf36a44c18954bd51e'),
-      (268, 0, 9, 44, 44, '157387272447ffa6bd4dffe247f0a8ed6cced1afefbe294e9759207dfa928edd'),
-      (268, 3, 9, 44, 44, '6032306c5855632d26d21d5e523146db323d322d52ad96ad13b815529cd55906'),
-      (268, 6, 9, 44, 44, '1e58ef598b916f1092d2a576204324d9628736711610d4d8b28faa69a398565b'),
-      (269, 0, 9, 45, 45, '8ef00e70eec04188432ee3cdf06aaf5f8a70b67d746d723e779e37cf255e7e57'),
-      (269, 3, 9, 45, 45, '47beb753ca5d22996f2613d216851657dbd32346eb8b8ecfde77ba2a3e475305'),
-      (269, 6, 9, 45, 45, '03721557b78b5fa383d9c81488ab24b7d033bd1b53537ff6ae9de9a487ee23e0'),
-      (270, 0, 9, 46, 46, '1a503cf36668310c171d3b1908e16af2c79525648d470c3247d49286fa13c474'),
-      (270, 3, 9, 46, 46, 'bf86ce3aaba71a7d0e823339d11d52e5db6adfa69c00c5896eafe9a5cd73efdc'),
-      (270, 6, 9, 46, 46, 'a38f000d6474d7208c6a5c0ac176a4b9173c9b8759a42f748ad1dbaafc48ddf2'),
-      (271, 0, 9, 47, 47, 'e01c89ddf285a808cc59dd30341979021e680880c09128e56646893853f8c8a4'),
-      (271, 3, 9, 47, 47, '08f7f319765523f1f252f09c4922d7b5f4ab489430167fa3a1670511fa1c12f5'),
-      (271, 6, 9, 47, 47, 'acf788970d3826a2e336da1830c3cb3f47bb8bac47549f9b3117cf2fac70496b'),
-      (272, 0, 9, 48, 48, 'd93da555eaaa95d22d99ac77e1940624cfb87dccbd77c719d4068ff71c6a9782'),
-      (272, 3, 9, 48, 48, '957078a4fe289fe09f3fa9e029d1f3b8e0208bd91719f02efd9309b7d0cbc416'),
-      (272, 6, 9, 48, 48, '03384c23f91a22d72bd94aaf4248f2403f50ba91d87e947ed3666567f488b81e'),
-      (273, 0, 9, 49, 49, '539a2fccef6a006d4f517540d56793e9be1341e8dd53341ed41913342e849d1a'),
-      (273, 3, 9, 49, 49, 'a82f9b8d65fec085550f13f943c37066e8b72acd26315964a86c58bebe5a5857'),
-      (273, 6, 9, 49, 49, 'cb96c5e3e5b63b442382f3c877dc48348a7bec99a68335dffc065ca75007cfd7'),
-      (274, 0, 9, 50, 50, '34d6781cf6e48453714e57f44273cea8073587187cbfa582df2772fd4b05b0ab'),
-      (274, 3, 9, 50, 50, '463b64415db029d7e867b9737f8f9dd1dc652abe7c304ac64d5729246c476873'),
-      (274, 6, 9, 50, 50, '12a31686a0dfe8c4eb3e3c63c791513289192576981c081066ac8bdcbe711d37'),
-      (275, 0, 9, 51, 51, 'af5d49e6e42328128857a3cb3b064c14ffaf680b2ddc27243719988f6cf970e2'),
-      (275, 3, 9, 51, 51, 'e2dd68fb3381d341bee0fa68583b558387027067ef9f83bb8cbc6d0dcb01ff7a'),
-      (275, 6, 9, 51, 51, 'd1aa44c84feea301ddfcaaaca1f6b381870bf6b6fadef66b3eb6bb1eb3e8a540'),
-      (276, 0, 9, 52, 52, '1eb2e7bc51fd9dfb1ea02c1675f784efa7087855c1f791fd4bd92d99aa2f99a5'),
-      (276, 3, 9, 52, 52, '23026a91ce87e0f535091463b23cd61ce28ff13ebf0c0bbdfdf77cd30c2870d9'),
-      (276, 6, 9, 52, 52, '5a8d6e7eb10c094ec82bc6b1e7ccf4b35f0443a6c2cd39bbe79103869999505f'),
-      (277, 0, 9, 53, 53, 'a7db595a870b83d019aefa8bf1f01f20337b958339196e91e7c2c75ae51f65ec'),
-      (277, 3, 9, 53, 53, 'bc08b1743c518314df8c9fda918f9ea908fe9afb45910dcc51222a1ccffd6e66'),
-      (277, 6, 9, 53, 53, '1056d0defff8c1ad62c6444c15a6887fc7fd388c807a8e2b1870ad7542c68b09'),
-      (278, 0, 9, 54, 54, '2afa136a26802e24f52b6f99fc0d9636ffd4e07a2c360def977954cdfeaae085'),
-      (278, 3, 9, 54, 54, '24a1f9c8c571c1d034b5a5e0925ccefdcc0bf291b51da8179e8dbd55767b0750'),
-      (278, 6, 9, 54, 54, 'bd0a89ed8e89b12f8a6d0715b2680cd54f41bbe63af38f6974df40bfe7a1546e'),
-      (279, 0, 9, 55, 55, 'c089c997ea965416b0fda611986b9032fc64d0078e2e7a63ab02070ed4d4e06e'),
-      (279, 3, 9, 55, 55, '232dbf89d0e92fec24a30c84cedf3313b8e8c451f22104c11a1c4377e571771c'),
-      (279, 6, 9, 55, 55, '2628bccfc229f0b8b998c5b4a0321f83c6f62d31785d21bddf4256f7e851c7ea'),
-      (280, 0, 9, 56, 16, 'b376679df70fc00756fc58803d1182a2433e3d48dca46271be119e682a843661'),
-      (280, 3, 9, 56, 16, '4d543005d7875e425292ab3a03a1cbd3716628ce1219913a423f6950673685d0'),
-      (280, 6, 9, 56, 16, 'b0c6e0033f1f2eb09f7017c7bef99d3905094878d51af055bd72a05e91f84771'),
-      (281, 0, 9, 57, 17, '8dbdb21b6a2067abed2697673eb4048d44ec0ac7eaf1e7972265e7718c2461c7'),
-      (281, 3, 9, 57, 17, '9dadbce8af6f63dc28c75eb5e8f70b0973a891a715b3e3ca9265cee2ec1119ec'),
-      (281, 6, 9, 57, 17, '5c37df3c677e90e8e4b8ad760e7a9d7122e49e5f8403b2b369e2c331a15bedfb'),
-      (282, 0, 9, 58, 18, '2088f95afb21412ce9b2c985617aaaea649044d5562ac6752df8770d3c76134d'),
-      (282, 3, 9, 58, 18, 'd110b9607622a23592b492b42e0ccebd9328b25914e4f61480a088dfd8473d7a'),
-      (282, 6, 9, 58, 18, '331ee14ea9e707bc7de301bcfa7368e21fe45aaaae3ace7c7532086dac16f80a'),
-      (283, 0, 9, 59, 19, 'e84e34dc4b0f15c87307052d7aa48d70a851cfa796e8801cbc2c4d576cad97e9'),
-      (283, 3, 9, 59, 19, 'dbc3a5cb51ab019ba1ec9dd841bc5584c5ffdbf99373f187e0386694680dff96'),
-      (283, 6, 9, 59, 19, 'aa1a6c4ee7805d4fb8bfb8723e715a1679c26189043dc0de91a3432b97274e0c'),
-      (284, 0, 9, 60, 20, 'aa3cda610485f81e633e41b84f8b108da189337596527d7e82b65144132e311c'),
-      (284, 3, 9, 60, 20, '0b249ef8a0a61392989855f01aada4462728d4cdc34147165767a1a2b66d4d38'),
-      (284, 6, 9, 60, 20, 'f023a645b65fc073fddad85eb2a7fdb011b49acb4e00f69c1d4a7cace4b6e809'),
-      (285, 0, 9, 61, 21, 'faccdb6c764dd6e266bd72bacb2fb3443f8b79dbc220513d13c914da52d79cfc'),
-      (285, 3, 9, 61, 21, 'b7e9bb82ffbdba377a7d80d6d50c2b245134028581e8788ff73cf6673398c903'),
-      (285, 6, 9, 61, 21, '535d009cf1eb24cd490dc0b9372b61653ced07f533cb4d0aacb0badf6a182ec7'),
-      (286, 0, 9, 62, 22, '6fe1806e79856aad39ff3a3ec3da326f3ed3f76013d34d7078763f44d62593f5'),
-      (286, 3, 9, 62, 22, '61fce86c9ee6f09b00a6970e9ce448658aa4efc70d9dc52b69e214fb11803983'),
-      (286, 6, 9, 62, 22, '9154d0d1abe116a73cf1ce17f90261f32a4ee82b47f1bfa0968c394b8de314cf'),
-      (287, 0, 9, 63, 23, '7af875c080872235b2f205194d12085ea60120beae0c46e90a78aabb2611da97'),
-      (287, 3, 9, 63, 23, 'c8dc468cb50f3c5c32299b5ecf5ac7857b3e80b712dc5545a1b896681be505e0'),
-      (287, 6, 9, 63, 23, '0b883d0b25e89f03d7a899473a8a663fe54fccd66ff0220c2f88c8328fead8e6'),
-      (288, 0, 9, 16, 24, 'fa7613f84cde3ebc469a327e00ae772a647f3e6c0237e368e1d7e42cb3f67c3a'),
-      (288, 3, 9, 16, 24, 'bdbc57a5a5ec359cf039e38c83adfed0f84dd6b0dc365d29b24d8458b88ecf4c'),
-      (288, 6, 9, 16, 24, '551dd18d551dac9be38b64395d45c5f7c7b3d1f1845097623fbaaa32c6a25f17'),
-      (289, 0, 9, 17, 25, '5abdd05bcd748098c718c61b74ffca55333bc9eee7b0b2c86a3e3ca05a29942c'),
-      (289, 3, 9, 17, 25, '0a515ea12cc55129593e6b7c30ccc3007373568db556c065e7f4987e94ea4876'),
-      (289, 6, 9, 17, 25, '435bd382ddc22bdc3ba6761c69bb52dd92939dbe748e41947228cdaf5e805b53'),
-      (290, 0, 9, 18, 26, '96119b1e8840431f42dd80a1d129f9a79ed0bfde6665f41103b569c15915d38a'),
-      (290, 3, 9, 18, 26, '1ec0b9fec820dd6fbd77d825f9071bc8a1a793f2c714a7b539f8dd3e2aaab462'),
-      (290, 6, 9, 18, 26, 'b0ae413da840ed115d4339db976ce9234b1c570a074d56ffb2a3a2cf2f036fa0'),
-      (291, 0, 9, 19, 27, '6adf155578c74ab47ebb50eaa9011dc017a6137c27ef5f987072d9c3012b9994'),
-      (291, 3, 9, 19, 27, '910e3f298620d5a8ded66f57032b78f4dd0a202b63578f44a72a9d2d67bf6190'),
-      (291, 6, 9, 19, 27, '3db85052a1f54481fea8cbacd6713b18702ebed1d20e96b22581133e49361b20'),
-      (292, 0, 9, 20, 28, '158218014d9bc35b565f0beeb974d059a49c86d31dd24d913d68ad4068fabe7c'),
-      (292, 3, 9, 20, 28, '08473f986441151a57de1e006b02b414d740a3d3ccc4a27999473f11491a3df1'),
-      (292, 6, 9, 20, 28, '10feec623acf88e22a0a8af7ccc1e7d21438c8f2f710c9871da12055a9ec65e2'),
-      (293, 0, 9, 21, 29, '7285a406223a2da3dc6452830c784aaf381c2bef887f1196044cbfb06e0f732a'),
-      (293, 3, 9, 21, 29, '3c3069bfea3f89c3b74150b0de54390cd514378eedefa8b07833671224df9256'),
-      (293, 6, 9, 21, 29, 'fa71f023cdffb2acd89235125df9a67c0914a96a71b44aa465eb6fc910451f59'),
-      (294, 0, 9, 22, 30, '5b394734dc67f65463477f9b02eebe1671a68ec7b2e55f544156c8e46507ae3a'),
-      (294, 3, 9, 22, 30, '519e294008074f9ad42dc74bff6ab7d6588b6fe46c2c8fd3a34e203a63b2a4d1'),
-      (294, 6, 9, 22, 30, '16f4ba5e3fd30dd411293cb1c15b6e2e186e635d8f9500296a894690bf879934'),
-      (295, 0, 9, 23, 31, '1228f32113a078f587e18326bc8b8409ab1abc73562c13931d0d3767ba77145b'),
-      (295, 3, 9, 23, 31, '3bc7bfd72caba3ce4b90d8d8c22b115871cc4c8316e40d111f88bf9531c48007'),
-      (295, 6, 9, 23, 31, '9b46b7204bbd0c878e892518cdee8fc9c4055b98219dd2fe9147f68068f66034'),
-      (296, 0, 9, 24, 32, '0bed753309d414baf564eda241fa1627575927c7efe92552f3fb9956a4297649'),
-      (296, 3, 9, 24, 32, 'e6ec2966f5cf0fcfe201f5762dbdcf2c4ec3e3dc2ca2e70d7665e295e069c1b6'),
-      (296, 6, 9, 24, 32, '04be33115728d25d8b89ae08c6073a6043c14e79a83b9596b08efad545f71f31'),
-      (297, 0, 9, 25, 33, '9fa91f3fce7341843e48ceace516bd08da710e7cf5074fcfe51f12377db13438'),
-      (297, 3, 9, 25, 33, 'd9b271d5a067594a6dfc1170e1a60c9aa5bd473e2982333b7bc26980724bc377'),
-      (297, 6, 9, 25, 33, 'eac2961ea609f2e6eafe50368faeb46d2da765fc609edfba69278b2c03f59bec'),
-      (298, 0, 9, 26, 34, '5e96039dcfc56f38422a36c03cfb810642de6df810825ec6e358e88ab0e8cd2b'),
-      (298, 3, 9, 26, 34, 'd35bcbee9d2fc86f3f2e290e0bf5d6deeaef42f9adf25713239cc5c4ea4bf394'),
-      (298, 6, 9, 26, 34, '1bab0d37e7f0098941e372ef4a45d413e7cfa8cc01760cd3c38ad7a57edda867'),
-      (299, 0, 9, 27, 35, 'ca9800db715e24bad76ffcfa973242dd0b9eb7d73b51f1faceb69c412a0c5e4f'),
-      (299, 3, 9, 27, 35, '9ff75062bbca0570cb8e72ac45332ab80e71ede5d964b67a784ef73e9c90b392'),
-      (299, 6, 9, 27, 35, '8265c450c7daff3c1e9778d11a048190222975ccb6129a0783feec0f2fa54174'),
-      (300, 0, 9, 28, 36, 'a721509c60a5a76bbbc11ceb92823f21b2b9f5fd000d18c602f715221b903ef9'),
-      (300, 3, 9, 28, 36, 'dcbd9ca2e1781415b9ec5788e690863dea5612664beaff3389e5e1d892f4890f'),
-      (300, 6, 9, 28, 36, '3fb5156ccd5583ad79c81cdab97382c2c899e4ae2039083f67c302e5315aac24'),
-      (301, 0, 9, 29, 37, '9a2a7d7b54434c1d86c9efde7c86fbcc29a4e3d0d19d1cdb3c836347871022cc'),
-      (301, 3, 9, 29, 37, '557249e1ead2188dff8329ae26849535dc10c872ddb651cfab353c18cb5af861'),
-      (301, 6, 9, 29, 37, 'c54227ad4c58c39eac0572bf59d3a8b514b63ba4402bf71ec9e694607f8b9863'),
-      (302, 0, 9, 30, 38, '4ff3e54d4aa752cfd3e6a06dad92c426134708b684b1104ffce983f893a92a96'),
-      (302, 3, 9, 30, 38, '2b59123ef34cc7b768662a4dfb039c8500a6accadd58434fb8fca082b6ac2e20'),
-      (302, 6, 9, 30, 38, '6245c6d5ec6c392fdaba7c4e19e4f5c278d72be9329137fd56724ea22e98c203'),
-      (303, 0, 9, 31, 39, '23cbe3b187375fc3d87f8e548fae99c6badebe003507437099d575f75cd114ba'),
-      (303, 3, 9, 31, 39, '4ae5f7b939a9a9156c3b42494f32aa3b127228c5eac6e2a804b189cb25a02b56'),
-      (303, 6, 9, 31, 39, 'af803631fc1cde9efa98cbf705afc2401f5762407a2300737558885d748e315a'),
-      (304, 0, 9, 32, 40, '1750967e9c5a103616d7403621019ae76be133a01c1dd6e05d511f80e7fbc43b'),
-      (304, 3, 9, 32, 40, '1869a6de2f4a0514bfd241989aaf2e2489aaeab26229e467ecc3af353ab0e296'),
-      (304, 6, 9, 32, 40, '4b3a8f5b5b90bf596267168561aa67b7429390fc1fdf256ecce0f8101c5d1c05'),
-      (305, 0, 9, 33, 41, '86b9a854c26d65d8654ad4bdf99e3af46736cfd2aa52f31441600863e48990dc'),
-      (305, 3, 9, 33, 41, '68e6a246a467baf89b5b52ba998b1292e42f4388825e3ad9c492fe31b83f0646'),
-      (305, 6, 9, 33, 41, 'fb2389d1698d4971c1d05d5c4bcdf88489b9836f60107ccba830c8509c0cab8f'),
-      (306, 0, 9, 34, 42, '55a4a359e245c8ccbc9c3772073270ff80c0829cc453ba359c3ac62bacd47fe7'),
-      (306, 3, 9, 34, 42, 'b1af01c8b3fad6f922583311a6611fec0d4900bece3776823174ba33b6d15bfa'),
-      (306, 6, 9, 34, 42, 'c32cb8b4b586513d2c4e25b007bc16a85931b665b2bb3ab723c7a6f78290bd21'),
-      (307, 0, 9, 35, 43, 'a9e9f34f84af6a9cea23e5a4e310b41452200a621904f3c45cd3ec9ec6c2a07e'),
-      (307, 3, 9, 35, 43, '39f36f3bbad047e2d06a68dc681ac6cae46dac9b18ebf8c7a76e663150faf64c'),
-      (307, 6, 9, 35, 43, '06bc29c869a670058d994e6f0ed24ab5f98cdf3a3ca35d78cf9424170f16e179'),
-      (308, 0, 9, 36, 44, 'ed7b3a76d5d4447aee2fd7e5f638ffdfe172c0acbc7534a07a6a5c93d972de31'),
-      (308, 3, 9, 36, 44, 'ad14d7cf62a608b0e3d5e8a8ef5335c202a66f1c21d6a232879d44138cad3a97'),
-      (308, 6, 9, 36, 44, '6bc089f90d6103029d4ae2b126ef8476c274963a31408b6b93339a1ef54e2a9f'),
-      (309, 0, 9, 37, 45, '631293f717c19489de28ce1175cbca7a0fb9abf3c09bb81ef183233c11b26cdf'),
-      (309, 3, 9, 37, 45, 'c975fe95a7bfd2f74c875d837734ed3667f39b1300ce1aafa5057e60f8a0d88b'),
-      (309, 6, 9, 37, 45, '9c6f116cbe663819ab933cb56929febe0abaf7162f829cb775afd2f81843d071'),
-      (310, 0, 9, 38, 46, '5527ae914e2126800cc79f48aa56d9c76d2ddb552fcfb3ae66ebd0ca51987d36'),
-      (310, 3, 9, 38, 46, '8ea93bb7643fafec8cdd413bed5bb4dbd93e82aad39bbfed57cfbf600e192d8d'),
-      (310, 6, 9, 38, 46, '95815902def3109dec348d5c3f555e892ea3e582ef76cc32536bb1ff3ae7d4e5'),
-      (311, 0, 9, 39, 47, '6b1cfbcfa532f8898f2d99d3d38aaee417d58821cb2ee92f26ff227c89d58098'),
-      (311, 3, 9, 39, 47, 'e59862b0e0a0919b461b8e5c8ed9f92a8eb31bf02b85bef3e16ad8dd0bd54708'),
-      (311, 6, 9, 39, 47, '4153c2d5395c62374155b9b909c74ae11b55032828aac63b829b41dcff9af35f'),
-      (312, 0, 9, 40, 48, '7a3741d4252b0c352794df060203a360ddadc1fb363dbdb720a9efe2906105b0'),
-      (312, 3, 9, 40, 48, '0a4441d6c8e8601e606cc0454e7600f31f7a64632bf5e44219be212738a37d5d'),
-      (312, 6, 9, 40, 48, '6805870ac7e60a876631532cc7bce5982c74134d1c8af3da7e58782852d2a4e9'),
-      (313, 0, 9, 41, 49, '1d477fa13cd4bd445fd3cc38c991a0734855f73a6d7f3e519f74a8ece74417b0'),
-      (313, 3, 9, 41, 49, 'f6154934c8b1f716d6515a21f04263672290f3e3f9dcb7bea1d9a4ee2e50bb88'),
-      (313, 6, 9, 41, 49, '230f130df28fd8b3e99d71cfac09f75c0e7a9c50fe58111d08c856220b44302e'),
-      (314, 0, 9, 42, 50, '6ee3f1907452b3fb351a67e03f0f26467ee9092bc863bbf7dc2b6d51ad22156e'),
-      (314, 3, 9, 42, 50, '36405d492e6ae0b4d51d9f37fb0808c123847ac16fc00a8ec93e90e5592d9c38'),
-      (314, 6, 9, 42, 50, '2feda3a79b8f5af2ff3c02b2c4ece79259e3d2c2c4dc764bdd30adafb7519a33'),
-      (315, 0, 9, 43, 51, '4534838c832844fe65fd20a583cb1240d39c5969ed1b63ec6fc30b5dafaf973b'),
-      (315, 3, 9, 43, 51, '44f50763ee5d47b7bca02d7b94d01fa6c35ecc9d4e56df299cb9a9c265e191e0'),
-      (315, 6, 9, 43, 51, 'd3a61c9691cf1c18c7fd662cc2f18238996700fff7d0edcfebaa700cd6618de3'),
-      (316, 0, 9, 44, 52, '39e908402c9f8c5781fb47469d1bf746c14d704786a0825fb3d4c46271a08684'),
-      (316, 3, 9, 44, 52, '38f871d78fe138bd2b9304d7b5362125a930d5afb85a37a2bbf38f19d12832b2'),
-      (316, 6, 9, 44, 52, '01eb702da8e48cedf2a8a861b3beb6144df28ded2bfc71774543428f56721cef'),
-      (317, 0, 9, 45, 53, '9d91d3a1120fc0c7da8b222f566ccd0ecafd3dc16f662b72c204c776b2f5f358'),
-      (317, 3, 9, 45, 53, '8978687db0957c1dbe3353c42d640d1fb76f914f979fda768169d74f8abc194b'),
-      (317, 6, 9, 45, 53, 'fb3f7566ebc87105e321fa8de4f59eb25daff8691a15e2536dca631ceee8cea6'),
-      (318, 0, 9, 46, 54, '23f22dcc3235881a3940b7cdec6792c0f053427a694747f21514d6b225d166b1'),
-      (318, 3, 9, 46, 54, '35cd228b4bf0cbbff96f478bae471028c10a9f271722e339801a4775c7015f80'),
-      (318, 6, 9, 46, 54, 'd203e4aa1b587fa319cbf87a6513a545e50f528531a7157ad42146514580ad17'),
-      (319, 0, 9, 47, 55, '5d21989acc6889569ea553064b9958d6ffeff82c2de85421f8599dea49a7e476'),
-      (319, 3, 9, 47, 55, '6274a2314b4f78e210dfe3965dd1a7ea7f82b8a844e4bc57ea28fb079185dc7e'),
-      (319, 6, 9, 47, 55, 'ce9fd857c4fe0586637b0c340d1ffe96e56a2132d746aef60585df8afffb8882'),
-      (320, 0, 9, 48, 16, '68f020bf50aeb00a04872f04f8f39d8f7d470e935f2e061e597543360596bff7'),
-      (320, 3, 9, 48, 16, '62f15caca5ef32d7250ab7849f9a138fe4dafdd45ec00f80df6631151e4e3691'),
-      (320, 6, 9, 48, 16, 'eb90e0dc55b1f8a9f7b7569b33d09097c2b9a61d0b5851048f39e858a5212fbb'),
-      (321, 0, 9, 49, 17, 'f79722e8faaa8aa36746b6d5a54ca9b221fce31f73c69616440bfb049e87f7f1'),
-      (321, 3, 9, 49, 17, 'bb62010e5365f8f0798c858e87115abedb9f459f9f11c4ab9eca27b76d1cc971'),
-      (321, 6, 9, 49, 17, 'e9d681fc1a63d3115296d197818fa99f21ff6a2ce05a4435b9093c3b3c437936'),
-      (322, 0, 9, 50, 18, '819fffa21e32a5c32c37ec00a2ee326bf5dfe25d76e43c7c2b649a12b80c95e3'),
-      (322, 3, 9, 50, 18, 'ad3255bc87eb4ecef869bd7de9ef177b86a9951a8aad6f37c9287401b4ac1473'),
-      (322, 6, 9, 50, 18, '6f348e9aff6799d3e5beba62ceaa1c1f31428e06d1a9dc18bd5bf364c0f0241e'),
-      (323, 0, 9, 51, 19, '7ea0d1349fbd6e31d562b2c8486cd4e73df3daf1c8c63ba8a16382792fcc84a8'),
-      (323, 3, 9, 51, 19, '24c00a9f3d4b11b2e1a83d32704c37a6e1b5e569e488dcf7dcc4b17805765d6d'),
-      (323, 6, 9, 51, 19, 'ade93aed7fc55e4b08f7c2fa875ff415826b763bdc6d416c52b4617f1200e34c'),
-      (324, 0, 9, 52, 20, 'c9750fd71d827678dfe81b55d6ef17c12453ee0eb05c8acb487bec6791052322'),
-      (324, 3, 9, 52, 20, '219de635026f0f4a07fbd7b687ca70b37f1d1e38686cf770431271a276b700f5'),
-      (324, 6, 9, 52, 20, '53c40a9aa597d7e0009de790a9c6a3c575df9d5a9c200368c1a0f2e5a3c3d9c6'),
-      (325, 0, 9, 53, 21, 'c23e6e1b28206ee891f6e2f0c17a1152ba4b62f991f540acc3876b78ab579950'),
-      (325, 3, 9, 53, 21, '50aaec1f20c6d18d26fc2d4967af3d30942dcfb4819f3e302eeeef19974751ca'),
-      (325, 6, 9, 53, 21, '133c7672751a1bc26e5549b812dda65f0a3fe746f48b952cba06d3d29abf867e'),
-      (326, 0, 9, 54, 22, 'fa14b64a2197bbd9090eada04a10d834a7fef4408bc9260cf299b526880d9bcc'),
-      (326, 3, 9, 54, 22, '8f6c55c79b6577635ec1511ecbc6f78c0989e067ac2622fb7b825fa80151f66b'),
-      (326, 6, 9, 54, 22, '4d5e65f3b0f8b00aac7be9338c117ed6052ba5174d8a20c83381e27cca5a587e'),
-      (327, 0, 9, 55, 23, 'db1b98e74cceecf628ad594caa9b114b1d2fb24edf3a5c0a5042c635c750a87b'),
-      (327, 3, 9, 55, 23, 'dd5a51418365d4674e7ab9f25ab94934d82d5702d1199f23b9676f91b5d747e8'),
-      (327, 6, 9, 55, 23, '3248260f472d04e3d6f29dace769bef5dfcc3b57a147844f2d9dbdd16c8d19f8'),
-      (328, 0, 9, 56, 24, '14c6cb17ae0c5a10c3cd289bdf2f936a6cc64c3c33d2054ef0b5864d1c7f8a68'),
-      (328, 3, 9, 56, 24, '8e8957970afdcd493f91c0c3baea125109fa4dc9a127916812340b5ebb24cb4a'),
-      (328, 6, 9, 56, 24, '552a5cbc2aec3ef8193b64a084977f019dbd9e0dbbc3afcf318ee38f006f09c5'),
-      (329, 0, 9, 57, 25, 'a5c38ff14e9d719675355a9bea47a578debba8ee756e807d117d541fa8589fe0'),
-      (329, 3, 9, 57, 25, '985a017c12f20811761e6c3b1a4fcbdd890dec3edeff563a81370d5222e23b35'),
-      (329, 6, 9, 57, 25, '4c8a3144758b99c348e0256991ea0305de72c619432960238cc9fea24deb6e2a'),
-      (330, 0, 9, 58, 26, '18c399069835981fbee9e5b781689d77d267fee4a182f22c435e73f0ade1c895'),
-      (330, 3, 9, 58, 26, 'd94a40b0b331be9cc4b76dd7aa4a5ae7404c4d3d4f5004f306b9a91944ae4023'),
-      (330, 6, 9, 58, 26, '9323d693082b00d21bd10bec890a338c03413449a27f739459909310ddbda2b4'),
-      (331, 0, 9, 59, 27, '4fffcb25e04286876b0801a3740146766e2abdfe9fb6e0f5b3a4d63a6016aeff'),
-      (331, 3, 9, 59, 27, '129ba30819ae15d49ddbd42e1c4ec85901dc4225ee723474fc00e5c8038b59fc'),
-      (331, 6, 9, 59, 27, 'bc5d856bd497bdf32c7b3c67df2cec619efc00c04b94051089fabfe57a31a346'),
-      (332, 0, 9, 60, 28, '0318b86dce0306e15022116b4855f84a4857e452dd74fed9b90ecf828525f5cb'),
-      (332, 3, 9, 60, 28, '1b28b3340673b97bd4f75ab4cbb4503054828f04a4d83c24589ebd6ea858e3b8'),
-      (332, 6, 9, 60, 28, '19b4d362fbb249cce08ae987b4b94b3a1962509f01a031fbe57d4cc8a2630175'),
-      (333, 0, 9, 61, 29, '823098a7803fd8a6b35ae9d8f8b7d673596b633a68ffc549ccfd5295e02ab674'),
-      (333, 3, 9, 61, 29, '147b66ec1530e0cc9d50806a4a4d1364e36fcac2e4e5792bcff1f48c011bb6e1'),
-      (333, 6, 9, 61, 29, '2adbb2a87c1620a6adb0c6f25b466209b5ddd6ae05333bf0673793a7a1103a1b'),
-      (334, 0, 9, 62, 30, 'e1d3fa89f0620c307dc46aabae6b84041f1ac9b452fb326d095b9b12a1740ff2'),
-      (334, 3, 9, 62, 30, 'ce7c825540b5eae06edf3b0e69a83a3e88e9086546a55cc0d950de1707929adf'),
-      (334, 6, 9, 62, 30, 'fa20619f0a2c368fb3722a233973d481ce4a5adaa08ae100cbbadccb0e7352e3'),
-      (335, 0, 9, 63, 31, '9f64f1f39279d3a6a3f63b53c169a5d3799544335916f6921f4bf3c2d786bde2'),
-      (335, 3, 9, 63, 31, '562bd8f532fb71b7fd7cfa9bd7cc7d1186d2e26a414e2b94c85125d882818af6'),
-      (335, 6, 9, 63, 31, '7a0aea297e79f28211f06dc554514d2f093ae0caa9507baca52788fc2a3ec53a'),
-      (336, 0, 9, 16, 32, 'd435f644922490082ce186c00c4bbbe55370fff6da07356f1c2c6a6f078a2b30'),
-      (336, 3, 9, 16, 32, '395552329cc173f9554eae17fbf0cd1db9e91040a847aac0bcdf135051476e31'),
-      (336, 6, 9, 16, 32, '04e6e32e16675473172f12ae3c44cbc750091c2d5f8bd41bdf420c44e6178c2b'),
-      (337, 0, 9, 17, 33, 'c8740dce7c1f40f8c5e5099c7b0634f313dcbb49e0ea030a24d5b8e118734163'),
-      (337, 3, 9, 17, 33, '7b06030a46cf296df4e30998f126b6a06c337e8d5a744c232385f9e1731a9b34'),
-      (337, 6, 9, 17, 33, 'a921e9c0c121c27225c1f41c8fb5027dbae061731aeb19c7ddb1172376145b03'),
-      (338, 0, 9, 18, 34, '718de6ce44eb09af2204362aabfd3384b9c132414bc3b4e79e2933475af33b99'),
-      (338, 3, 9, 18, 34, 'ffad07482743f47570b8991fcb36beb8b8339ce2cb1b4f391fc94860fe9efdf9'),
-      (338, 6, 9, 18, 34, '9ebacf864ae03b8ddad143ce26899b1cb95ce3ad58daa67ed462208ae7c756e9'),
-      (339, 0, 9, 19, 35, '3bc692c035c7aff3356c9351e5354ec95a527085f39ebda0ea780a29c097f640'),
-      (339, 3, 9, 19, 35, '1db82243956ae6393c1f7b95b8ea27942239b7dd0eed69f3e3b2be43025dce0c'),
-      (339, 6, 9, 19, 35, 'd762ad07a72a30ccd4ffb33cb62b28445256e7bfa50fca97c47ce0cac09be18a'),
-      (340, 0, 9, 20, 36, 'e50f05089f51080f856e3c0b2685ef9dc8b1740dbbad8e614d73dfa4c3266290'),
-      (340, 3, 9, 20, 36, 'ec42b3b012d558684d9496bddb54bf7b55d62a5b56535af06cf5b7604f3da6ca'),
-      (340, 6, 9, 20, 36, '4f91cc43069b89561d54c2d5299b7dce0f4517a9f32af890a99a38e8e15bb90b'),
-      (341, 0, 9, 21, 37, 'f0ba6132ce731dc4bfb2238356b72a666e7b48fe3c05e10382544fad15604895'),
-      (341, 3, 9, 21, 37, '2f2e993155944157b2019ab4f2387c6acf7615443e72edecbdc5bb5880b16757'),
-      (341, 6, 9, 21, 37, 'cca6d4291c1357ec09bcea7cbe447d7d6fce002fed45c2438b476bbb9369401e'),
-      (342, 0, 9, 22, 38, '00a747eaa132d7c8a3c09f11d4acc3d0de2056a481a9371dec78b1047dce6ea5'),
-      (342, 3, 9, 22, 38, '0fad0a5b64e60cc9101f44b5a7b1c1318e5d310216bf1a582a44ed3a2082bfef'),
-      (342, 6, 9, 22, 38, '5ce66e6e39a0e474f7457fb87dd02b2afdbc8a76d7769ebe521505b07be47178'),
-      (343, 0, 9, 23, 39, '0a44123e28bdbede1ce730bf84ff6462c67af184e939d10ce8546059f6edba1f'),
-      (343, 3, 9, 23, 39, '19a2f07f0b43da9db32c72391b54f8c2a222b087e5ad92e893489aae9b2a42dd'),
-      (343, 6, 9, 23, 39, '1342059f7f9a824e0d0d03cf542db9ee33d3a0aa89e0b57e9cc283ab9eb788b3'),
-      (344, 0, 9, 24, 40, '587766bc3249b80c9fc35ea06cffb996079cd0673483480bc83c72b4e96ad0e8'),
-      (344, 3, 9, 24, 40, 'b6c7219574c76963c260480551e054102d8e4cfb1d1a63ee8339e9a335957d7a'),
-      (344, 6, 9, 24, 40, 'a63c2c187bb796c4aabfadb60ec6b1c76fdd586a0c0b2d2666d5e34c90397117'),
-      (345, 0, 9, 25, 41, 'e42fc03bd95f41d0d7ca6a29c576f8665fda4786862da6a762ce27ec4c0ea064'),
-      (345, 3, 9, 25, 41, '540e0c647db8d694f309b0d25e778ada14f0e14210a110d52f989b2a85c2a4b0'),
-      (345, 6, 9, 25, 41, 'a73c3909ecf1ada4b56acf1f61593a7eff03ded0a43974795734721f06f58d3e'),
-      (346, 0, 9, 26, 42, '63a49e592730d6892df41f711c5b881dc09dd09727a0bf30903fdf8c4641390b'),
-      (346, 3, 9, 26, 42, '79be8d123bd3e7dea41302e7dc999a5ce72118f2a0eb99f5452c3e0a13d643c4'),
-      (346, 6, 9, 26, 42, 'ed087ce086ac21228d3abe7819c659d88a9c7d58e10b5f0753e6bdd2d1fa6bee'),
-      (347, 0, 9, 27, 43, 'd1b6c49588522ebc6df0bc1b1af7afe9e153654ae4f5c96d5237544906a5c514'),
-      (347, 3, 9, 27, 43, '31398a8af6fb6bde43d6ecf657b0ee8d7e2870065856a24208fd552d34289d8b'),
-      (347, 6, 9, 27, 43, 'a9efc1e57207509da598640861c39621054774566425af238d28ed343dba6e18'),
-      (348, 0, 9, 28, 44, '2cb7b33714fab85b60f942fada6f421e1970c76987d65f7cd6be3ccd503d1b89'),
-      (348, 3, 9, 28, 44, '771eb7c954a8693c7c949765e4b07580aae53ccb5310588d817858fbda1f13dd'),
-      (348, 6, 9, 28, 44, '9b8681e08ca718538d63a1866b0927cf0f045fb050beb9294c96477ec8462b6d'),
-      (349, 0, 9, 29, 45, 'c28f6f19280b2ddeca3b3143302fbb2c12358a77981a98a2af4cc8c7c61aab5d'),
-      (349, 3, 9, 29, 45, '2d9281f22ef2518b0636b87e30117bbe8d7262d9847f5099bf39ca3f2af3f5c5'),
-      (349, 6, 9, 29, 45, '9189acfda59a135fe4c3fe830a2b47b866e0d0db65b4d0cd5395d1928ae1ca7d'),
-      (350, 0, 9, 30, 46, '7b10453e3f69c0082e7ebc129f229c5f580a33ee847c9202034e63b4678b9d6d'),
-      (350, 3, 9, 30, 46, '255fef801ecadf7ba0ae2636b89b34ce056b0643cf1bafa8799aa5ab8416d61a'),
-      (350, 6, 9, 30, 46, '1441627fd5c52ddc3db0a5ba1b9906dc73d4c435715d7ffd92bb9aabd723466b'),
-      (351, 0, 9, 31, 47, '2937e3390b941c2c76255ea46e3c7ec7ee0bc230bcd376d52963a8e1e46daeb3'),
-      (351, 3, 9, 31, 47, '93f51739fd251d89a12bd7069901e6896d33e57d00a73766c43aad739ce9e7c8'),
-      (351, 6, 9, 31, 47, '0083c0f1b988d4206842a50b86cd6ee9026b680d5ccdec96d3640d2cea2f5758'),
-      (352, 0, 9, 32, 48, '7b9afd84a16f814f2eadb5d8e8b2cabae35c50b5c6891cc0344ead1a6cc69404'),
-      (352, 3, 9, 32, 48, 'e4dd71b23c4693759cd03bb38f5212f07e2361fe47eb4424931be7b975f95cf6'),
-      (352, 6, 9, 32, 48, '8ca4fbeccd529ea36cf91959b3ffbe023543c9d747d7d7406b0461cdf9e9e3ca'),
-      (353, 0, 9, 33, 49, '3a6156049a83670624a3f0428d0ebf631721327ad0bed8a40dc31f68d96ab1e9'),
-      (353, 3, 9, 33, 49, 'a8442072da8362cf3a040d454d8654dd40995762471ff1361e59ce366cc85bd8'),
-      (353, 6, 9, 33, 49, '4747755b0ba1a59f20361daa77b6f1aad9d9b047dfbbbe4b5f551217aa8da962'),
-      (354, 0, 9, 34, 50, '90fd0f3ede3d97d5f96fb77fb1718ade20bdce1eef5704074415d22566489dca'),
-      (354, 3, 9, 34, 50, 'fa26003fd86bb6c8a232d0a49cef15f24c73800e6a742995bf310edbd107c0d0'),
-      (354, 6, 9, 34, 50, 'ef3d91a1286b5a55f1a6d44a8e0f0ab1deb7ca09ad40b7894529e13b176fca3c'),
-      (355, 0, 9, 35, 51, 'dca7d284fc43217ac6445607ed3b2163fad763297566adfa3936aaf138d64cc7'),
-      (355, 3, 9, 35, 51, '8553d3714295555b3b29efaef55d85d025cdae176d81ce954d5475cf8a8e6bcb'),
-      (355, 6, 9, 35, 51, '0e4d7e3b71329a12eb2ce4562b78b8bc1c4b192e47c0b2397d75da4a1aeeb620'),
-      (356, 0, 9, 36, 52, 'ed2df4df560ae35f96e06de8c8ecf0b20438266c17913a164ec813550c2f1e1d'),
-      (356, 3, 9, 36, 52, '5bb84bf0f5dda5347eb235b0b79a3ab61d595b8d2660d8d6c32b68381122ac5d'),
-      (356, 6, 9, 36, 52, 'ff1b2fabc8f97027dd0ca24c01877998d6d940821548c94499633428417f9dc5'),
-      (357, 0, 9, 37, 53, 'cd254bd7bd616f014d062affd4bf30a5a9ceab7707605d1d72f147cf1a5e59da'),
-      (357, 3, 9, 37, 53, '53d8c843cc005cc5872bc10d68e14efc3fe5f059c5a7fb2b1af58161e579bc65'),
-      (357, 6, 9, 37, 53, 'f41ee438b0e249910719622bb4e46896f7e625d3eb65f92a5bdceea208f5c12c'),
-      (358, 0, 9, 38, 54, 'c54e8f87bdcb3cb4c62b0e62902137b3dc9c57192f9aa421a1d7d904b9d9bdcb'),
-      (358, 3, 9, 38, 54, 'a60b16cbc6fc47de9017137f87a73d41239e14346f9a42d82528e5a1876d4b36'),
-      (358, 6, 9, 38, 54, 'cc70200e78367c2d0dbe7932246237f90bbf1f2eb559b2b98edd2a71c3b0b744'),
-      (359, 0, 9, 39, 55, '2951628a98327a9c6358972b64406f3344a40ae64ec40937d37fa814327143e7'),
-      (359, 3, 9, 39, 55, '87940fd9f8e84d794f5c3363cdfccb091a86356bd1d6e9fb321866f824aa2b8c'),
-      (359, 6, 9, 39, 55, 'd341201c9bbbe8ebb452b09ca27827690c7de2584c80cba0a59fa9e1ae3cc626'),
-      (360, 0, 9, 40, 16, '969fff50bcde4211daff0b3c7f3b5a49d29dba1c4e9b2b3708d54839fcba9ad9'),
-      (360, 3, 9, 40, 16, 'fc891fe927e275767aae98919e5233e10ec90495cd058299408a52625e289354'),
-      (360, 6, 9, 40, 16, 'bf287fb459bd4c393f7bbb44e7c9b2712da441d6b68337db921a4d2b6027ce98'),
-      (361, 0, 9, 41, 17, 'afd9e97e2bf1c4406ce13ac0d812bcf419f8261b5d2558c3634f9e293b14b84a'),
-      (361, 3, 9, 41, 17, '445ddc53fa96e6b10cdd49e00e8000c8893f56b16de3a25e87249dd9dac2bafb'),
-      (361, 6, 9, 41, 17, '423c71b2a4997c6536910f90c9d1a558f5f6a52680188c0b406babd61c227cfd'),
-      (362, 0, 9, 42, 18, 'af74c3e02101ebbc0382cfcc5cb963b56d6b1abc71510e1858ebd9c1cae39fdf'),
-      (362, 3, 9, 42, 18, 'b068ed5f3d3c69bb4dc26623672441bcbc04bf4d6aad9f9636fe522d32808578'),
-      (362, 6, 9, 42, 18, 'c1e82928161d1fa9a4afdb6a945458e72e7ccf8d1eb375a8abf226bfa5e1a51f'),
-      (363, 0, 9, 43, 19, 'ecf36c9b8efa998b06adf5167c1910c74f9e0301b267a313a091b5021a0349b9'),
-      (363, 3, 9, 43, 19, 'dc4acab29e207b6550b65a762243c2e10624c235436f71c627843179bc9a08eb'),
-      (363, 6, 9, 43, 19, '21e816858683d51e9b7a004346f0458ac2be03938ba0ecbd922bc3e6c46b08a9'),
-      (364, 0, 9, 44, 20, '88d99b7b36eb92fff767e76a1c711394b3f873c67e9c25e082d567186817d6cd'),
-      (364, 3, 9, 44, 20, 'd967a2debd955ddc7f5179d9a5bc6524ea448f8f44ad784368a7885363780195'),
-      (364, 6, 9, 44, 20, '18c48f30f5f9d44ab4224bf6b3d3928d77af916f15001088f7ad7933c3feb264'),
-      (365, 0, 9, 45, 21, 'c9dfd4603b35c39df1304c51245db19a2ed9894f14a39b11bf8ddb86bfd5f8f7'),
-      (365, 3, 9, 45, 21, 'cbd86a79f8536fda17d6c6653dbcefda7741c14fcb43f5d17f0f86c4ff77d7be'),
-      (365, 6, 9, 45, 21, '86a5bec9ec2f055d77dd9a4911a056a72f6facb8b0ed4864a63db4bbec040c38'),
-      (366, 0, 9, 46, 22, '57ab134bbd06d6f8812a275b953e802b8e51ebf2e36cb10f334bd3a1eb418404'),
-      (366, 3, 9, 46, 22, 'bb417f73bd87e99e14558cb12b0f2468f5a679158d41b35fd4e37a0d57020c15'),
-      (366, 6, 9, 46, 22, 'e757258a3e9d3eb8fddb5ecc74dfbf487497d802833185becb45ebd9b71890d6'),
-      (367, 0, 9, 47, 23, 'a350b8a33871ace19c1453ac1e091dd0111bafe65148ae836165f7422128a1bd'),
-      (367, 3, 9, 47, 23, '91910cb1b2c4677791cf749b2326e717b26d63927402b413fa6cde39721e4ec7'),
-      (367, 6, 9, 47, 23, 'c7554e57e9e8790f8b1b8a7f16a54e4a31a8c20587ae8e0f0d7950f32425dedf'),
-      (368, 0, 9, 48, 24, '8377c0986399dee7d6a515e0ece0bc7285ee99de1a0a08ea6cd7cc555cc45fbf'),
-      (368, 3, 9, 48, 24, '3f70055fab97905087607c6457d163e79b93a47c84b094c60f000f4a9e06aeb1'),
-      (368, 6, 9, 48, 24, '1abfe45e849b3b0d9a8e6b142c11b1dd2e0410fe7ad75fc1ce1b5bff6c160df7'),
-      (369, 0, 9, 49, 25, 'e0678696f9a508beebe7a520da246222f1d7d548bd5109936fd0468142ab0fd2'),
-      (369, 3, 9, 49, 25, '96adf5b36ed4c926f678f8687efe3d2f2571934be03c03794408d3fa00d5454d'),
-      (369, 6, 9, 49, 25, '158d48e81cc7f02260d945d6615ec49a72ae682f922e9764bf25b756619d5997'),
-      (370, 0, 9, 50, 26, 'dc9783435c2ccc2b0626213998071c3341ecfee0d52f2b487aa4fd3d5823e499'),
-      (370, 3, 9, 50, 26, 'b06f13000bd8afafb08d463b8d43845f36a7e2ae6493bdafa5a21e541284b39f'),
-      (370, 6, 9, 50, 26, '1efe932891f4b4cc748465ef9a198424aed5b95300bd12bf4735d0180ce772fa'),
-      (371, 0, 9, 51, 27, '88fd1b8d82ce09fdc4fa2373204470d1f2162a9aafa9dfc0d8f59c318b3d03cb'),
-      (371, 3, 9, 51, 27, '9b9dfde71a3d3e0d404fd3b5deea9a3c9ade394b80364e082a161667d3a26805'),
-      (371, 6, 9, 51, 27, '66dee915908a109016ee0b45f8463006434395dee206f5a24185bf88a786f775'),
-      (372, 0, 9, 52, 28, '91f610f5a189487a088b8904ffcb1501ede3990344cb6c4e1dce5faf65c46c69'),
-      (372, 3, 9, 52, 28, 'b0d3c4389c4fd23ce7cb066068e49ce4dcf55225c1a9089e042d9d988a34391e'),
-      (372, 6, 9, 52, 28, 'd051f8b150c170d97f9d3dd0d07adee6ae8c243752ba0fd332c390c5f20ce005'),
-      (373, 0, 9, 53, 29, 'f46631cc554116a5a076770d3187fb544ee9556b3ab5ac8d536cd5b374ea5254'),
-      (373, 3, 9, 53, 29, '2471b4ea9fd24f5312213ac725ac9c701b7242f2248ef148ea438d8bc7676d21'),
-      (373, 6, 9, 53, 29, '6b2223b87893842ec5ff2adea74a8df84a288962452110ec5387e09ff5fc22ef'),
-      (374, 0, 9, 54, 30, '47a7fa0f198ca1283ad679c4d1033cc58d3d68c7920a1153fb6ccc6c905f79bc'),
-      (374, 3, 9, 54, 30, 'cbd9d7ba7ac6a0cd00972c8960b4c3c56cdf3a526a26eb1f3bf4db3ac0e0021b'),
-      (374, 6, 9, 54, 30, '3ea3461b2cfd3e59628adbff596af8596353831902831d3dc881669ecf308ad1'),
-      (375, 0, 9, 55, 31, 'a60f50d4ea6570811280de3f6f124944c323a45a396abdee4948c6632e82ec0d'),
-      (375, 3, 9, 55, 31, '5c46abcd1056ddc25849c55881fe597549d248694bfd460b9aedad80b683e8af'),
-      (375, 6, 9, 55, 31, '8d4d881a9015e4954bf88f980e4ce142516ce20cd16c0c80e748d5d612de563a'),
-      (376, 0, 9, 56, 32, '89f05ca7b5718dca2e25a191b97dc9c3649d17af10ed70f689b4efd4df36de75'),
-      (376, 3, 9, 56, 32, 'ddd62bdba7747b0bb814275983c1d3d199e81c69c5d0c63eeea389d8483d763c'),
-      (376, 6, 9, 56, 32, 'f8d4dcfb72adfea7fdf67f99e8197ab287a53a530e686a76f10b891118fa6102'),
-      (377, 0, 9, 57, 33, '6397dea6638fbea535b505c3e128568433529179e36b5138a71b97a84616fb13'),
-      (377, 3, 9, 57, 33, '8b359f6b8f7d578f71046a9a0f6f7d6048b34004e347e4552f35398954ebbef1'),
-      (377, 6, 9, 57, 33, '4822a7d54d985b6eb7969ab61742660c94c0865cc8c681dd46e3e56396dbddda'),
-      (378, 0, 9, 58, 34, 'ce2ba1215c3989db29bbd18b70b89a957ee3ef6724931a02f0d11812abadf750'),
-      (378, 3, 9, 58, 34, '8e6a831e2ac4655c23f10faad7bb41efc241855d0157130771babdf2168e3e3b'),
-      (378, 6, 9, 58, 34, 'ef20dd95316b9a36fb28f1aa7bbec5af4c48e0c04086cc6fc663ca0f2f9f17b2'),
-      (379, 0, 9, 59, 35, 'f2855fe6addd308c361344446a74e8ab7d300c13f2802847de1f943d87066dbb'),
-      (379, 3, 9, 59, 35, '91594cbe5160d1408e18ff80395fd1973a8e04fb449fd5e76e6d84b13c26c239'),
-      (379, 6, 9, 59, 35, '238bcc44e4a01c519d442cd541378692055931b686e9f9f39ec884bf56f4484e'),
-      (380, 0, 9, 60, 36, '46b73e4ed410a8ef7d923b9e97d838c0d3ab34a9578c73195a2603a42f3eddfe'),
-      (380, 3, 9, 60, 36, '454d959e36c2d66dff37e0ee125bf5149d5ec99e7c7a6b5e66cd919ac141a1b2'),
-      (380, 6, 9, 60, 36, '73ebd93d77fc7e5c478244a09fcf20758f1698fab6c7f2c043b123d201da8602'),
-      (381, 0, 9, 61, 37, '58836f681640b9cb9908c4c092ca88ae98528be5722fdbca05496f4b642056a9'),
-      (381, 3, 9, 61, 37, 'a6503d912dc387e9e17b256ac5cab5e4c1cc83478aa78c5fdc85a7d82a0b671d'),
-      (381, 6, 9, 61, 37, 'd4fbafea5dbb2a94c238cdd21ed6390d931961cabef515b494d26431deb94943'),
-      (382, 0, 9, 62, 38, 'e4292486761589b9bf2e0117b1f3d8d1b37e1aa23232ed1bdbc205ea8a8c8568'),
-      (382, 3, 9, 62, 38, 'b8b45d624d11852c0cecbb65a2dd67d0f983f40a41f3cb6446772b14f83a3fc2'),
-      (382, 6, 9, 62, 38, '8f00a058a9cf87f1d85e38f321500dcdc5e4c703ec24b077ca4eef24521ee5e1'),
-      (383, 0, 9, 63, 39, '3fdc5619e34a0124605d6042d9c090883bdc7d7474d5d498e34eb086be1adabe'),
-      (383, 3, 9, 63, 39, 'c1b310b8511007cfe6ea5a61502522efa2f25f071665c2ee7bca8b84086972f0'),
-      (383, 6, 9, 63, 39, 'a7fe2c0b8c42aea06d2be0f225d2d3bf602e544f7f1d3e6efe8c39b39d881df0'),
-      (384, 0, 9, 16, 40, '854d91b38378ab632657e5d9ca58a9635801152516274233485e2fec8e2b495a'),
-      (384, 3, 9, 16, 40, '5accfaece944999a6e50408cbafe2e5e4f62fce297675746a017a082e37d9789'),
-      (384, 6, 9, 16, 40, 'c46ff1baa17dab3754b5c908f610739f857a0874dfbb3883ef674dfc41dc4e16'),
-      (385, 0, 9, 17, 41, '7a0acb97bfec6101e4d13a4d031659da5a66947770cc1e7db13746c789451223'),
-      (385, 3, 9, 17, 41, '4e0300f2ef8cee202a62eaaf6b8d50dd28c7142ba593604b23d934e48dd23d0d'),
-      (385, 6, 9, 17, 41, 'bf6e8464fad2dd74464eb5a64ee9fdcc0271d8a3466981f00056b58982fa0522'),
-      (386, 0, 9, 18, 42, '8a36a5f5289c255e889f0296aff90b3f64fe446e7efa6d696d25b0a975383221'),
-      (386, 3, 9, 18, 42, '358b7d1e4cb9501bc98ab47eaed37e265767577cf64ac26af37065893395106a'),
-      (386, 6, 9, 18, 42, 'e3f84ddd215b822d08a05431be3466ae8eb647b2e8f2153e677b2957a14111d8'),
-      (387, 0, 9, 19, 43, 'b9a728f739687b4df1b4d469d3e89ac5172ff414a10c8bdbff3f1427a0491d66'),
-      (387, 3, 9, 19, 43, 'eacb57c058886447d2a7f8aa1df0db16467c3dda7c18a948309abdf8848a3b66'),
-      (387, 6, 9, 19, 43, '1bbd76e3093eb414d8248d4db061daa78b17b5d4fba68197c0ce16f8bbe0206a'),
-      (388, 0, 9, 20, 44, '48708ca2c6a9c2c233e22f24d79d532bcc0abf04efb97c1f9584f01a91d60226'),
-      (388, 3, 9, 20, 44, 'd8839ff4c6e092f71e364702f81cdfdf3d5c5d43616932959c1955397456b3dc'),
-      (388, 6, 9, 20, 44, '0e05bcf92896d3749aa7739a2c74fa33d031decaffe34c1bfba8ce5af3808fca'),
-      (389, 0, 9, 21, 45, '666288b8426677f15d17b89a6ed42b804b1abfdbc20a071d19f6b626a6915042'),
-      (389, 3, 9, 21, 45, '69b86ecc24abda6ed93009b7584959c69ad0ba748cb6d60b2ce8c38d0b3067f2'),
-      (389, 6, 9, 21, 45, '41b98855fc6a7aa341585318d7a628cacd698280d73454dbeffc6d3725f2778e'),
-      (390, 0, 9, 22, 46, '023b29cb1272dd8bdbd7ad0c94e810963eae76f52e226620ce0f2cb15ee2af96'),
-      (390, 3, 9, 22, 46, '0d480e526cf4eec01b5be1b3cade05b93b4c89ff1ecd3ad6987cc4ca677ab46c'),
-      (390, 6, 9, 22, 46, '9a3f284aa1f5f3ecd4a6e893f02bfbbb801b5501a209366e8471b8eb164e345a'),
-      (391, 0, 9, 23, 47, '4be12806c32f427297e2e77fce908a4ad6f70a227c7d240186f1e9d4952ca568'),
-      (391, 3, 9, 23, 47, '30021c114d8e2a17a0e43ea68e9c5618567c06850e0c681003c51765d7a58553'),
-      (391, 6, 9, 23, 47, 'a9a42387a24bccd094ba1ca3083b0761b1272bbe45308c0374de11273503c2be'),
-      (392, 0, 9, 24, 48, '99bef1c6008b8956dc283dc7cfaa83261db4fb0641a23392f0a20d52ea88df10'),
-      (392, 3, 9, 24, 48, 'c77c50ac59c65c375adf5d040f1005c91ab81f63effd8487f1ceb802f54ca1cb'),
-      (392, 6, 9, 24, 48, 'a529e8c51871daba2ebcd2ce3520bc431bd50a3bf562ae3ccc6a9113056e8d61'),
-      (393, 0, 9, 25, 49, '8c14193b071d97bf0278fc03cee2f1987c79fbe9c7299d494ea4485cfb7bdba8'),
-      (393, 3, 9, 25, 49, '6df9b269d8a230e653bd3b95db4a56518f40f3c6ab4f95d2312c5cd36765d0e8'),
-      (393, 6, 9, 25, 49, 'f20e43b0bad6857764ec93a6dd7b57802e65e3a5c0ff41e6d70fb0278dbb31a3'),
-      (394, 0, 9, 26, 50, '6708a3a3325f5ba022cfe29ba63521cbd7787503b3fbcaf25d9fdaa26796aae0'),
-      (394, 3, 9, 26, 50, 'e27e203c9a5c44f0989a4c5ef083cb10ac75ffc031d29e3fac6fd892abd0d554'),
-      (394, 6, 9, 26, 50, '1cbb739a11527c981c4848a1ee3c1463a1ad075832ab616bcdec59b285e878fd'),
-      (395, 0, 9, 27, 51, '9bde9940d9a90451932ced1657b2267374e7416a77847ab9ff4acb831853e31f'),
-      (395, 3, 9, 27, 51, 'd421af2b7966ab80f52a4d893495a105f47d20cb4aab4502034a14e3e2747d81'),
-      (395, 6, 9, 27, 51, 'b676ccdfc0ec34b1db5e5b6cfc32767c89fea57ab04d94e1835a9305ef28b47c'),
-      (396, 0, 9, 28, 52, '34f0bc3a0298e59304aa8015061eb79929ac4db607cb04cb4f94d9b40446f3e7'),
-      (396, 3, 9, 28, 52, '90b13ecfcdacdafeb2e769ccc6b01412d5fb5ed36766eee93f1bfddeb767a469'),
-      (396, 6, 9, 28, 52, 'b1c14d89cd9f624e6452a608252d13fb1530ed3248ea841b058f0c0338999b29'),
-      (397, 0, 9, 29, 53, '430aaf82302e710d865221d1d33a683b69844552269a4e4352bfddbe49e103f9'),
-      (397, 3, 9, 29, 53, '6c105b210ed581820ab741a5b45b732978dcd048520a0ee646563a6da23f6f6b'),
-      (397, 6, 9, 29, 53, '7fb5d730339ac3a700913d2aa5a58004f97cdd278e24b9fcdb1fc0972e3df639'),
-      (398, 0, 9, 30, 54, '04a33a142bf870e3326a07077655019c2e7c6bec2e3a6a245ce533e1e7044057'),
-      (398, 3, 9, 30, 54, '1de5c714e22f228e9a2338d732823af9ea25899407702f86f5f1ebe35859eae3'),
-      (398, 6, 9, 30, 54, '5b3ef24ad8c99b18bc64313066b26ea16968ca50b564eb8f0056e9244481cafc'),
-      (399, 0, 9, 31, 55, '87c1d22fac0d7eca27cc21e25f3e6c1af5998b8bfb5f2b876dca34cec08f361e'),
-      (399, 3, 9, 31, 55, 'ce3d4dfc97428b1fb9eae7597c0b646fa8223d9fe65f3cd845fc62a4d8132a23'),
-      (399, 6, 9, 31, 55, 'b5602d51f0a3e00b9577a42520f7662c790d86a5307260e37608793cca78fd05'),
-      (400, 0, 9, 32, 16, 'e0a35bc714cd764998c5547014941b146c21408f571da1202f2350fa1c2dd761'),
-      (400, 3, 9, 32, 16, 'b3f5e1ad3af1f073a184445246e248f8a939466e07b957c9c274d49c5547d966'),
-      (400, 6, 9, 32, 16, '7b24fea10e7e3aa739032673de0586e9473dee52f502288c006dc81336f06888'),
-      (401, 0, 9, 33, 17, '5a777ccee7ca0eaf9c9ac97bda5bd9a9f0e528f45e198e6e4341faec69812fc3'),
-      (401, 3, 9, 33, 17, '04dccfb296569aae6a7026a9a71fd2fd97f1504d19152ae8641d4c51ce8b1be7'),
-      (401, 6, 9, 33, 17, '6972a403cc230425a389105b37c86afe6e0d1ae450974fccbf6f1dc5d69cc5f1'),
-      (402, 0, 9, 34, 18, 'ef63944ea095a0106de03b307b6f8a35bf7b1d92894b74ca8589445a9fed2ca2'),
-      (402, 3, 9, 34, 18, 'd22df0be0d4e0031f055b487b90a55381d46e91771ef88e4c0ff907104d7cfcf'),
-      (402, 6, 9, 34, 18, '883c1be846e76e42b40cd1dcd0c67da8fc08b88b67f7dd13723e608d27a85942'),
-      (403, 0, 9, 35, 19, '4ebefba9b3682d9507014ef62122c6e4a65b7394ced5e5141b7c08c5867a2b7c'),
-      (403, 3, 9, 35, 19, 'e2e1bbd3112e48f87f51ba696672891a5b33f6aad625899824e6329000e90474'),
-      (403, 6, 9, 35, 19, '6db346e7c6bd5d7bd3fa607ed0e1bd4e55eee0016382a7f166edbe2b0c388836'),
-      (404, 0, 9, 36, 20, '791b9509a47bf690b323c6b994818254c513f223a6eebac61204fba4dc1ef99d'),
-      (404, 3, 9, 36, 20, 'b81f1a7eb40656dbc7f5fd98422e58ad287844da99d28ed7ac268bf446c72481'),
-      (404, 6, 9, 36, 20, '69c7cf5dda6408124ad93ea4ab62065e1a4e56b839f7d4599beffcaa7796af04'),
-      (405, 0, 9, 37, 21, 'aed4c8d5d8dda50697b48ca4d60b1a4fedb9b36543d79bdd14605fcf67622b5e'),
-      (405, 3, 9, 37, 21, '5de11c2623840d63e0da14176349ec58951d148dd41ae33ce227ba2d63876ba9'),
-      (405, 6, 9, 37, 21, '41985a2a8b1c739da387274481d07e1b6f2e9bdfbae18cb2a3286263b6811f34'),
-      (406, 0, 9, 38, 22, '3c750cc0af217c543b90cee4e4f5ee97b4a483f50be59c21679a131a1e1c8de6'),
-      (406, 3, 9, 38, 22, '74b7add77748ce6e46e78ff873d83b53c51b60853bec96bdcf7946a1c80e2ce2'),
-      (406, 6, 9, 38, 22, '687f60830079bc7f6e640a1fe29d101942d7db1e9a52cec68a0ac40c53b89f8d'),
-      (407, 0, 9, 39, 23, '19153ce751821b62c8a35ca56bcd8bf49c993bde45218ca4ff14b1cb9de81b23'),
-      (407, 3, 9, 39, 23, 'd7919b318a30200d205d44b09f2447520bdd56210eb545bcd8bd53cf20d08d3d'),
-      (407, 6, 9, 39, 23, '2bebc852a265e0667cb9a95891ac4b0729702883f91abf9aaf166141a6eae0e5'),
-      (408, 0, 9, 40, 24, '522540d1918e63655ddc7c31c0b50e2deae3a2a0f0bad46caa9cf7c4dd9bb401'),
-      (408, 3, 9, 40, 24, '8fc6ebffcd2a8471dcc8b6da71e86facd7b6bd5a23d3a94a84fd89a0d58ae831'),
-      (408, 6, 9, 40, 24, 'e6b7103c3b9faea4bc0668b8e55a7a0034657d1ebd3a03b32207809951f9919b'),
-      (409, 0, 9, 41, 25, 'a8ac162a314b1fd01d0ab17eadd28a754453fa75242c5e465d744796b80160f1'),
-      (409, 3, 9, 41, 25, '6ccc1d5cba939ec970b681e52be3ec84cd2eef3069dcb4d8e72a482394fb983e'),
-      (409, 6, 9, 41, 25, '07765646b12e946d819353baaa561d12d69cd7f6823d805c4ed5eab2f5adc164'),
-      (410, 0, 9, 42, 26, 'd040bf1de52d1cb6f6d1f8a29cafedebc406fc95b445ac531c3b974de0a88788'),
-      (410, 3, 9, 42, 26, 'add81168dd14ad71dd31c37ea77fa533923f0b7f8a5a9b6e9a4e61fb265c2645'),
-      (410, 6, 9, 42, 26, 'dc7f792b624570e247166c83fb47d79e1fec11062df267ec5c71789e938eedc8'),
-      (411, 0, 9, 43, 27, 'e2418355c1de8fdb648543164090ca69657a47181ec0db4a8bef69e894194a98'),
-      (411, 3, 9, 43, 27, '75a27622efd5edf20f1229e7cbe4584549e65ec16bb5d0da0863c5826870ea96'),
-      (411, 6, 9, 43, 27, 'e8a76663393d598440903ec937be71f090c5a11fa3e14ef30f6e48d121e765ca'),
-      (412, 0, 9, 44, 28, 'cff4bf516f9ad7b66a09551f5d0f34e6831e385b9f17ee7f48ee9c055dcd9e5d'),
-      (412, 3, 9, 44, 28, '628d86d609e7701ea9ab945b62ee9bc58ac1d800ba2532f143d92f4ca4b0e9ff'),
-      (412, 6, 9, 44, 28, 'b33bd1ed4596bc9c33c107a5b3c531aa2403de0e3e2c3a4caafc90eff10707c3'),
-      (413, 0, 9, 45, 29, '5605688f135e182aad3ba733521b5d6c6ba27193be83a3a42284b4266d63b704'),
-      (413, 3, 9, 45, 29, 'e3d709d932c6aac677bef17cbf0367c0f77fdd44072d5c4d91601301e4846e47'),
-      (413, 6, 9, 45, 29, 'f6f348d9418867696e85e11035d02470eb54570d55765fc1f3f109a026740567'),
-      (414, 0, 9, 46, 30, '08bd66738d33dba5721ed09f0f75233bd8aa9b77c2d09539cc5ca49075d855c1'),
-      (414, 3, 9, 46, 30, '965a33c5b55db31247859252a0f5be5a676e987c9a7ecddc556a809e3c6f205f'),
-      (414, 6, 9, 46, 30, '58c9bc88f0050bd085ed5b1e2ee3b891816a3735ae3a56365f07b079f77d2d83'),
-      (415, 0, 9, 47, 31, '5ebb0e0ad2d731542a75389e04758f8e5eea5d6485d3e84c835bb5d961118c66'),
-      (415, 3, 9, 47, 31, '50d3c55775ec794da63a89ffd6487371d1275827540323e97a4bf5a5d8cce133'),
-      (415, 6, 9, 47, 31, 'a302f423964e198a9cbf25dcc5bddb4df3aaf13fc586efb2d333fa26bcebbf36'),
-      (416, 0, 9, 48, 32, '66b0078eecbd6b5e7fc8668228fd0cffa9523ad0c8046719375113e859a60795'),
-      (416, 3, 9, 48, 32, 'b855c1c97f01a835d1c864e1fd5c72e5ccaa4ca9c55ed46c00bd3c44b1f1264f'),
-      (416, 6, 9, 48, 32, 'ca72c7bc78d2dd2eaa73cbab85d742e245c25ed73d80c4e5c7a2d7d2cb89287b'),
-      (417, 0, 9, 49, 33, 'ac32082281603e511ab07a0458d5aa7d7a2f770560e9136647e40df6a140852b'),
-      (417, 3, 9, 49, 33, '959d0ac47b91e2b3d12fb0649849ea87e139c882922664c616b9ae0b45072ffc'),
-      (417, 6, 9, 49, 33, '4c8745f598ae6e2af551c49ddc9c5799f762d505a2b7527303b309150ece87a5'),
-      (418, 0, 9, 50, 34, '17e9fa05bc58beee4e5ad48ec9587587c47fe8bd9e7807897454e6bcb555f460'),
-      (418, 3, 9, 50, 34, '267ecc087aa1e9063387f712507ea38c0e2b6979487cda1549cbe6807d4dc5ac'),
-      (418, 6, 9, 50, 34, '43353835be308681d221cf36fab8ab621ebf2ac16ba6d2d163aaaf80320b5dd7'),
-      (419, 0, 9, 51, 35, '307b0e38049a2ec51137149e77704847bdc01e81d1753fc72b6a160994d3b371'),
-      (419, 3, 9, 51, 35, 'f133f12f0f73e0b76d931e6e784d43570d4ec767841cb6c4ed810423a29d1484'),
-      (419, 6, 9, 51, 35, 'a89fb4c595ab26c63245d449bda0eb0ac77d79ae3bd91214ac29c7dc59905716'),
-      (420, 0, 9, 52, 36, '3ecdaafc7b11602f51bb4de491141d5430ac621e41b3a00ddbb4cbafa0da9808'),
-      (420, 3, 9, 52, 36, '40a10e2ba6c3eed83aae12780ecab12ddf7f3aa41186cc8a59b61809cb8290b6'),
-      (420, 6, 9, 52, 36, '2f1da7dfa5975422c8b35170215b50a7e683f60bb1370aa12d172daf6486b559'),
-      (421, 0, 9, 53, 37, 'dcb9052f06506f5c398d6b49385d225956e94df4913338a3422cf05556618d25'),
-      (421, 3, 9, 53, 37, '9a7fe91317f93000af10f020ae3bc033374af4ba2eb0e514c08bd2cc4512cb6f'),
-      (421, 6, 9, 53, 37, 'f751d8b65852b28bf2075de2c4c48f2f459ac28345e09d88e908a2b9230cdd35'),
-      (422, 0, 9, 54, 38, 'ad94272f6eb009d19d66b0cc7e6cefcc2e2c2724b14b4a516c843d4117f5c43d'),
-      (422, 3, 9, 54, 38, '5a3950e5b083d35231657f506cf47fe51d18e4990d95f5808346b83cf07423c3'),
-      (422, 6, 9, 54, 38, '32e88872f4a11cd8378db957e76a372f9a0d40fd88f29ea05312e00acb9e8ad0'),
-      (423, 0, 9, 55, 39, 'f2a5f3ee2763ecdd2814bc00b08d032020b5515c37bce3139b98fcc101e82a9d'),
-      (423, 3, 9, 55, 39, 'd38d4178f28e0eb05df863bacb1a2e9d6242b02a19c747a0768db83eedb88613'),
-      (423, 6, 9, 55, 39, '20a696b6a22e16d861d00f3d1331677a2591eb00fa287ac02c6f0c11d93a60e2'),
-      (424, 0, 9, 56, 40, '8c8aced0b731647c9400bb35bf02cdf81420bbabdfbb31495fbe6f6ebfda79b5'),
-      (424, 3, 9, 56, 40, 'db658a773351228926445ef11f9a6a595a2730409ab618b8c4d6b93e5e9b9cbf'),
-      (424, 6, 9, 56, 40, '4ddf345dd6721c5ca1d1e055f3b619e44059152e3fc15febc3b3336bfe44b47a'),
-      (425, 0, 9, 57, 41, 'f71ec99c8bfaccee75c8993f4935d66d8aa3fda12fd622609483e986ef4b1c54'),
-      (425, 3, 9, 57, 41, 'dc8b8ff63f3b281a39bd6b58cd34b2df1f821a3f511b30f2463b98a2b8295617'),
-      (425, 6, 9, 57, 41, 'c2b777ef570f0392284d044e0ba6ff5c63a4e62319ed115e7664bc09957f9b75'),
-      (426, 0, 9, 58, 42, '6a4f990596843148edde8cd776f36d83bb7b0daa66eeb64d2ddff07db968138a'),
-      (426, 3, 9, 58, 42, '95c087e32829c648e7f0b2c82f6f6f265851bb48503ca7d3ff30a69a8ed72f4c'),
-      (426, 6, 9, 58, 42, '88a5ad0abcea2dc2418ffd5fadc5f4182c5909d9a0b95aa10e0da4db8439a2db'),
-      (427, 0, 9, 59, 43, '33af2c4dbfb0dffa8a3cacfba0259a1a78299faf6420a85bea7cf632b2660d59'),
-      (427, 3, 9, 59, 43, '82c5b98e7a840bd25419f27d4bf90b2009f70a5ba041e4f3b17be4f24846bd83'),
-      (427, 6, 9, 59, 43, 'eeaeccab963a418f5bb45de305aadd2d526c7baae8fcc3e2891010366ca2883b'),
-      (428, 0, 9, 60, 44, 'bc8611c98ab49006cd9a23e6dd5b2749d17fbca39b9b477a7828dedf8d8ecf8b'),
-      (428, 3, 9, 60, 44, 'd8765be2559b9b2af8c2ed006115725bbcd7ed35a82edb2ac0b72cae0a3d78d5'),
-      (428, 6, 9, 60, 44, '4c9c819d9b2be6c0434fd75c6ab6a18c8cbd34d588a890612f71ff9702520cb7'),
-      (429, 0, 9, 61, 45, '61054aabd9255b0b9e27e4b83e1d5840a7b87808595d464018f979c84402c44a'),
-      (429, 3, 9, 61, 45, '471d43e52600250f00715113d1b97e3c307bdd32782367fc1e8026f006864abe'),
-      (429, 6, 9, 61, 45, '2ece890f7de260b754c106b54b6e87cc634cd9c37da24858cf6941db4b429f0e'),
-      (430, 0, 9, 62, 46, 'c7519e480a7d27602bc8a47be1e744a41996da7761219de3beb3694b082fec52'),
-      (430, 3, 9, 62, 46, '373accb0427566340a08ca19b06faca4e91faf96c63e77391011cf01785960e5'),
-      (430, 6, 9, 62, 46, 'd95c0525c28036be6cc19be05066fdaff6f795026922cd6c8764b4add7cae725'),
-      (431, 0, 9, 63, 47, 'd4e8200a4db7d40dcf0c1eebf8c152fa51f4099a2e052d820abf1fc3268b5e99'),
-      (431, 3, 9, 63, 47, '21727486ddaa5e3bcdeaada0c9a7810ca53a8d0cfef494890deb8936cb39a98b'),
-      (431, 6, 9, 63, 47, '0b4ae64c9a88e203ae28672c71256ce071afbddfea54de8a04b7958f5e5a64fd'),
-      (432, 0, 9, 16, 48, 'b21da1aca2129bed84b0ec8a134a3dba9ba8b9589b6cb544ae3d9d4a0389ec4d'),
-      (432, 3, 9, 16, 48, '077687d07b4dc4c8e8db116614ec65e45f5b804e9d8b8c2125f43a6d84cd7578'),
-      (432, 6, 9, 16, 48, 'd5ec8cd2d9a9ca4f817ce2575a5c5ceddb108f8f4deca17448cbe35f3b7bdd6e'),
-      (433, 0, 9, 17, 49, '37a6611d3c442b9db098a22007489cecc37ebe7baa3ca8b9406fff07641203c4'),
-      (433, 3, 9, 17, 49, 'dc1a953491ceffc5bfeba4b250cf335e61f9e5acf7ccec9c698602c495d1502d'),
-      (433, 6, 9, 17, 49, '122fca39f532622a85d8be67ce04a1541935961016ea4dc0b1fe62842461075e'),
-      (434, 0, 9, 18, 50, 'd595933d355772bcbc76c45b679e15331b1f5ed90a9eeb82b92990ad32755048'),
-      (434, 3, 9, 18, 50, '24963d4262d76b41496246efb25c5a7c4b7b2b13977e6b21ed03a457810276a5'),
-      (434, 6, 9, 18, 50, '4571302b6bd8b71e6c95a9ed6ab6c10e82eba9b88d25da6eca71c25da893860d'),
-      (435, 0, 9, 19, 51, '4e636533f79064df91abb12229aef36d9185d62136b6c7a07d0dd31b397a41ca'),
-      (435, 3, 9, 19, 51, '009c6aa586bb3cec1f6f87a60d210883030a6dd8d657d97a3fb3df655de80057'),
-      (435, 6, 9, 19, 51, '33dccc836838f6172592eda9ac151de28822e4ab8219ce25a45da295e19a79fa'),
-      (436, 0, 9, 20, 52, '621408443c9bbb93e7b4eb2fa059639a780def34fbcb888ad5365270beae7c64'),
-      (436, 3, 9, 20, 52, 'b30cb805c1b361b6c11cec409be889fb5fab543cf9c1f5089cf3b30defbc7d7d'),
-      (436, 6, 9, 20, 52, 'f7eefc6d1c9314697a88302c6c34cb3cae948b31aef54711a83b2e341e919408'),
-      (437, 0, 9, 21, 53, '61d895a98916d5ce627142b88f59e75e70cfac8c55f56553d51978c7460514eb'),
-      (437, 3, 9, 21, 53, '8c2548342b033bfc92cec5920c0f056d5cb3eb760d9c9593176c3ea65ed3de7d'),
-      (437, 6, 9, 21, 53, '5137168b2ba622130779c3e43bc9fe796048563720fcbb73ab84c18d3b5681b0'),
-      (438, 0, 9, 22, 54, '3071e8f3433f85d501a9ae93ec0658b3243fea03a46b1f34b311be6d5342da11'),
-      (438, 3, 9, 22, 54, '5083fe8d9f33bc77ecc094fdfa9ac43e074d0aa15fc49aa788e73c7076c393bd'),
-      (438, 6, 9, 22, 54, '6701de08fefdda487bb3ee82d3583acdbfc6cb74614af879e3edaeb3f093de7d'),
-      (439, 0, 9, 23, 55, '0d8c9ed72e345c80a138e07972bd9184f6745926fbd6c0406145866ce1f3d034'),
-      (439, 3, 9, 23, 55, 'cdd7f8ec2475bec5d54931c7f3ec6419ab67cd27f6a0bcf4e1b0c2e1b380cf43'),
-      (439, 6, 9, 23, 55, 'af522f6271683b4a82bee1f522b1f66c93f5a54a99b0e4561a4bd9f89a76f8ff'),
-      (440, 0, 9, 24, 16, 'dd2ae60374932ea8924ec2f0bb4f05938d58b859f9e7994dfdd99a2cb89818c6'),
-      (440, 3, 9, 24, 16, '5f0d21451e73767d53b53db833b0d773ce5b9ad1d12320127e2b3f716ab7e80d'),
-      (440, 6, 9, 24, 16, '7f376e63689b213474d3e5bbddbeb23fef096086fe16eda441bea0d418425d72'),
-      (441, 0, 9, 25, 17, 'e621cc59a48049d835c0d191dd79706998ba7d0330cedf79c9f05ea6c664c663'),
-      (441, 3, 9, 25, 17, 'a12b00dade1534de3af7ac679b8534956443226ac267bba4a5466dda3a72ca22'),
-      (441, 6, 9, 25, 17, 'd95191683df1eea8e2a5773e04ae0a0fe5dc360c4bad52699d348e24d415de65'),
-      (442, 0, 9, 26, 18, '16c4c65dfc1982edbbb9dd4e22db3e5418dc979c396d266f70547cf6433fd4ab'),
-      (442, 3, 9, 26, 18, '61ba96cc68733ba7916c68dbe61df1e4acd3c0682e4609dbb25dd9c30e60ecee'),
-      (442, 6, 9, 26, 18, '14fb5b6f8d3a07d3297dd5d5e785a1bcf8ebfb34c3abb4cbec7c02811a9b3d58'),
-      (443, 0, 9, 27, 19, '8a6a6fce27594cadf91a619bfe15861f272f58b3660094efd585d11871f5ff5d'),
-      (443, 3, 9, 27, 19, '4fa2294d4e9a23b6d773131bea5ef3856c32281f9aef5d0d93bb1afb2f1956fa'),
-      (443, 6, 9, 27, 19, '062299a64181a10f419fa1954dc7a17fc71e5473e6f289753cf9a70abda0263e'),
-      (444, 0, 9, 28, 20, '626169b423c576383e13f62339e2918cec0751bc3cb79cc2cd744c871547664d'),
-      (444, 3, 9, 28, 20, '341db0a065d9509df83ee13b211d94b99f2377cef0403b0a6d472f5a9b3accaf'),
-      (444, 6, 9, 28, 20, '9efdb30496a04f8a86bf9b4583fd4a7463917614bfa3bd2e84c0ac1b277d63ee'),
-      (445, 0, 9, 29, 21, '0fdae589dcea0cd7fcbd5689729b92d9a1313c447c0425d0bc99d44ed412c47f'),
-      (445, 3, 9, 29, 21, '1185fc2df63ff37db9f26f69c68e1b72480cb864ec6ce94d26d9242c433f701e'),
-      (445, 6, 9, 29, 21, '6e4e61995703db009498044f81c460e1c3b107f76f06988408da351363c949ea'),
-      (446, 0, 9, 30, 22, 'ee3f02a6f9c59309388ebfee97e6282976b09596e64d84d132f1106c5ec09c35'),
-      (446, 3, 9, 30, 22, '0451a510b7d38bb2321818fb784bf6992fd5396063fdf85e427a456e240b10c0'),
-      (446, 6, 9, 30, 22, '1a69085b9f9ce3d5da5afc2dfc6ca966c53178b933d813d871b0e2f52ca75429'),
-      (447, 0, 9, 31, 23, 'e80d78aea5531da0c019ec4df0623eca63ab967775920c6d74c6957bb022d665'),
-      (447, 3, 9, 31, 23, '8e5a21a86c737bc8611cd693b704dc1fe0c59ee09dd97f3a663e9b0dd25de3b2'),
-      (447, 6, 9, 31, 23, '9a20c3ed5964c21c954c216d4b0a5a0a93da6dd69a2b2b54116c7fbdcedf5f70'),
-      (448, 0, 9, 32, 24, '4b80a9c0ceee833912b21d4521cc39f87e8144c96820a8fb3e4292aaef493d4f'),
-      (448, 3, 9, 32, 24, '3f06046ea8814b41b78146604572b3d2922adf2e593e640b2b97de57731d8e9a'),
-      (448, 6, 9, 32, 24, 'de2a7585d90de23253bfe5d05487195414fbc983745ce6e17da79437d6747860'),
-      (449, 0, 9, 33, 25, '3c5d031fd21f877123a6df8b6376833ca121582b92fd72e87a9481e022cbad12'),
-      (449, 3, 9, 33, 25, 'e85f4c93d087c209071932847fe835cd9e241776bba1dfb5a3bb7d67512ea4b7'),
-      (449, 6, 9, 33, 25, '4edca250ffe50c29d42f3a7e6dfb9df07d6a7a094ccec7017c8b05ce7cfd13b4'),
-      (450, 0, 9, 34, 26, '85124242095bb59169c700737247fb8171c8bfe27eb164b887fc3e92ab394c37'),
-      (450, 3, 9, 34, 26, '7acf5f8c6c04f4b7c1b301b59ffa48859a7e12487c2e33d3dc27b0756aabff66'),
-      (450, 6, 9, 34, 26, 'ecd9fd9824f63e056dfcfd1883ce823f87780bf5999dbe0720a2b918798e7fd1'),
-      (451, 0, 9, 35, 27, '552a613adad24ac973cd2504dd66cf7e9f0b26ae70eefdf865ba1175a12c6c8d'),
-      (451, 3, 9, 35, 27, 'c59a6f883797b584f37f3519d8cd7691dccca9eb0fe9e0ec9d2624315d9d66f6'),
-      (451, 6, 9, 35, 27, 'c7d28745c8e903ffb36c31ad3f2bbb88e147e4ddc8837df1f255df9d715c1d0c'),
-      (452, 0, 9, 36, 28, '5462828950e74d275bc9671ea8f7ed024468b7f498482a89afb2fae804fa3f99'),
-      (452, 3, 9, 36, 28, '19688b23ccdd250bc3f0d37d816d1f1891bd56b4b2a9c34d75810f664ae5fa66'),
-      (452, 6, 9, 36, 28, 'cca658cdb04b87855ee09857cc4169fd42e2ee6d902df4785873a4224d21cc7e'),
-      (453, 0, 9, 37, 29, '1e14408c7aa9c74a31801aea7c756a628c0a9f1a2bc545acbd952b10b6649692'),
-      (453, 3, 9, 37, 29, '1efebe8ef8ecee8c99cb7fc61d961fdbadbdebd33872d4083cb9f855bee64425'),
-      (453, 6, 9, 37, 29, '52197e8ae9ea8770a8008348266bd331b3d71bc7aadac8984d424a20a2da61d3'),
-      (454, 0, 9, 38, 30, '0f68c88ba384c722e4e442e7dcf600efbf669439ea5dcd93e62f3965b427f77d'),
-      (454, 3, 9, 38, 30, 'ca8069856120fd53ab93928060b945524e6a2a5380b511ceefa897a6f33ba162'),
-      (454, 6, 9, 38, 30, '798b9e87acacb59ea8fac99da9e3101e97ed9ffffb058a9ce8102c69765fd374'),
-      (455, 0, 9, 39, 31, 'e220d17fa2eab6206d38d02af5f2667b4d8a2560cc8ce973f18b2c8b3fc6595d'),
-      (455, 3, 9, 39, 31, 'aca121d8d3d360d0df00fe6f566766272cf00dbf3cd397e94dc58f58901ae0c0'),
-      (455, 6, 9, 39, 31, '5bd7551316acc9aeaf8ff2936cebfdf55f9c1c3ea1723a069a545d55449296eb'),
-      (456, 0, 9, 40, 32, '58b3806c7133d5626ebb9fbc6797002adcf7dcd4cea3d8fefc2ff8e70aaf9a46'),
-      (456, 3, 9, 40, 32, '43de8ca267748e64fd88511ae0239677af6408a42da245f710c7722cf2d51137'),
-      (456, 6, 9, 40, 32, '8b9b84420cc21af1a29c8efe4c70618b27dacdbec017931ff9b2c74990d1c6a1'),
-      (457, 0, 9, 41, 33, 'f41b5fda2e38e769808004fb7d35cd79dd0e904b5f9daad84afbed617ed25592'),
-      (457, 3, 9, 41, 33, '912be506f5c47b99a2275d04ac7c2702b9cc13db0acf1bb4a992312ac405160d'),
-      (457, 6, 9, 41, 33, '591e676784fc3f45e00600f7214c82da9d815bd10bc276aeb4b1785ec8b175d2'),
-      (458, 0, 9, 42, 34, '94e722b59f5a59f159d1a9f9f13be9ce8e4d2aa88ab01363443f8b197baae1ca'),
-      (458, 3, 9, 42, 34, 'ada5104fe470f805dd4cbd274fe14c4125c4417f1608e530fd792d6efb93a5b3'),
-      (458, 6, 9, 42, 34, '2d15ef93d716360a174860693ffc1c571687e21ff224013eeeabbe43929e970a'),
-      (459, 0, 9, 43, 35, '7df74d6bf2913999b1b2a62f7cbab368648921dd9fee750c3a2ff281f88a737d'),
-      (459, 3, 9, 43, 35, 'c360dcabcf27c605aef06a2bf72cab243d8b34ff49b7642f5435d688a714bd54'),
-      (459, 6, 9, 43, 35, 'caac45c6a0f38b8e9feee5c46746b6fb6be11ec38a812526d4e20476c2601e70'),
-      (460, 0, 9, 44, 36, 'cf6da6dadd9610dd8191a042525f891d2b9599412910be27718770d7d158d675'),
-      (460, 3, 9, 44, 36, '770dd214e58abc2dfdcd419d8435553503e32c955073500fccc45b3d7d40568e'),
-      (460, 6, 9, 44, 36, '2ffa3d8a07bc6bbb3a69c7ceb53074f369ff092592eacfe81b08b14ae2de874e'),
-      (461, 0, 9, 45, 37, '384cb527946795d42cccaadae3dbd3cd8525962230245d946272ba2340a03a06'),
-      (461, 3, 9, 45, 37, '2774c5c3cf070bbe6239704b3c90773ffae86479398cd27544a8181f447b9e1b'),
-      (461, 6, 9, 45, 37, '95d997b3351558cc193d18c927bc6a467ea7d2832c86acceb3809218a99a0609'),
-      (462, 0, 9, 46, 38, '9c7dec88e7f5c4746280fa1a1a379bc125fb7cea3092027573c225ecf9c7a9b1'),
-      (462, 3, 9, 46, 38, '047a30acea1a8db63208a04f57e7194fe1fe5170448f9dbff8e0e1405e1a6fe0'),
-      (462, 6, 9, 46, 38, '29750ce1ec51189d8bf521f696ee6d9668e02a1ad6f58f0fbcf3ef07f61654ed'),
-      (463, 0, 9, 47, 39, '3b15ef06ed77133748ddc5adc0839a9b0349387b04472f8581bbbdd5df64fde3'),
-      (463, 3, 9, 47, 39, 'f46b32c863e17513ed59e0a9bd46fae42b13866e1da1c819598e827f3ec952be'),
-      (463, 6, 9, 47, 39, 'ac41f4fd421de9fd7454c338f4cd607cc33a398986fa0edf1a860fd91183a85b'),
-      (464, 0, 9, 48, 40, 'c6b0f63595d4420ab74a0f57c107025e6c228277045146e681b26a6306f5a62c'),
-      (464, 3, 9, 48, 40, 'd8d6ceced767f38c51d71489967757a346097d7558fcbf1943bcae9bcf0ca4b8'),
-      (464, 6, 9, 48, 40, '8beb88385bd1ee0a0f2606304c3035661a63e2864c6528540b28176770ed5356'),
-      (465, 0, 9, 49, 41, '5c8dc49bbb8fc7b263c79a23e7ff725c0abaf138aff748792bd76403422bcd48'),
-      (465, 3, 9, 49, 41, '9026ea4a9f0c2b05420f936be07184478a03ef4fed39e6602727aac57a5beac7'),
-      (465, 6, 9, 49, 41, '372df08777358c6c863e0e543065d7c85b0e96683b4aa93f880c70da34e4ec1c'),
-      (466, 0, 9, 50, 42, '6b834f04cc5fbc0361c75261c63e00f81fae41275e1dc9c46f0394b25cf4c10b'),
-      (466, 3, 9, 50, 42, 'ad58328e596e6bb3546d48c917b0978ea99d2957f114bed9367c95bfe246ed81'),
-      (466, 6, 9, 50, 42, '115102301828fa7e25bbf2e92a56c308e22e2c41bcb674e65809ea9a832e0eeb'),
-      (467, 0, 9, 51, 43, '564bfbaa5c00876c064c0b31b9ccec1d8082c65cef2cfa20d1d8dee57cf1b205'),
-      (467, 3, 9, 51, 43, 'd7e1d342c60985e7edba445f4937280f5d5c5310c3db042ec644ce554b8a0d32'),
-      (467, 6, 9, 51, 43, '3e00a60e13311b6f403c79f04dc9294dff6c0652cb125bca5930eb95beffae95'),
-      (468, 0, 9, 52, 44, '9d6a3b67a87354064a75cb916b1ef04a5996f8ec0c69810f1c2ac42caa7d9db9'),
-      (468, 3, 9, 52, 44, '2751f0ce6f2261957cde6ffa18247ead464011b6c497bcd0e74a73b59ee13492'),
-      (468, 6, 9, 52, 44, '2616581d8eb9c724e8b9f8160e4d7b8179a452e0339d226aa43f34ae1c2b8760'),
-      (469, 0, 9, 53, 45, '6d5f73e86cf42990296d8afc083dc7b06dc6c34b36341410901c2479c61fb6ed'),
-      (469, 3, 9, 53, 45, 'a16842a2f0d3cc06771d0f80dc78da40b73d8b396ecc7d3f208999b5c99fdeba'),
-      (469, 6, 9, 53, 45, '27362542baa014308ec8d1b92e8a473cd68308933c39fab8edab587a5fe6df47'),
-      (470, 0, 9, 54, 46, '000649c18eb0dbbeb65bfc75859734937592c0cafa70ae93773487d4b41d0f6e'),
-      (470, 3, 9, 54, 46, '8fe265d76af9b9873fb18ac9c93d6bbe0983e1827b82d7fea782fce26ea59829'),
-      (470, 6, 9, 54, 46, '9c135f3270a390f0cb78ecebbb504cb1a4c11d9d3bdcc024280023ddb574cdcb'),
-      (471, 0, 9, 55, 47, '48bf9e055aa1838f2125b557fbcd8ae06f6beda7ef1ff1a57b3a74705ec87ffe'),
-      (471, 3, 9, 55, 47, '47a909d9cb69dff56e45cc72818149719881ff98a134a1e9d25d31e7afd83342'),
-      (471, 6, 9, 55, 47, '435092954e82cc9317dd02722d5d7b6602bd7848fd72364099a845b8fcf9d7cf'),
-      (472, 0, 9, 56, 48, '9ca7678e5dd78e555c1da2b3e42f3933e7650a412f378e47a84560c5ddeb5183'),
-      (472, 3, 9, 56, 48, '2d840dbe32d6b6c4a088ef8fb9dbc01907dfc34368383a3f9a6100474fb1e744'),
-      (472, 6, 9, 56, 48, '2499a30ae6d7d85f01d6793e11f5eadbd28058d2104a2e40b4231034863db45d'),
-      (473, 0, 9, 57, 49, '4afa6e943bf8b5a3f8ea5622000cc4f6c41564bf3a940dc0e5309fda0b44957b'),
-      (473, 3, 9, 57, 49, '2b9817fdd216efee5cda37cbc1ba197fba868725fb902ddd5dcd7ded7739bc7f'),
-      (473, 6, 9, 57, 49, 'dfe47642dd6160d7eed10498d5b1791be90947419e86a1e0f57552c575ce53ef'),
-      (474, 0, 9, 58, 50, 'bda264baa7126ad97cff34cfa2d6e1bdadc293c9b92113ee5d89378e2bc30533'),
-      (474, 3, 9, 58, 50, '3fb1a678a71eae2f46786a20bf4f991e15e295a458cee236806cd74bfb2b5969'),
-      (474, 6, 9, 58, 50, '590f8a222e555a8fdb8122992b06d4523c2fd7b13ef8320d02c2a7491b710081'),
-      (475, 0, 9, 59, 51, 'ff3849a090d5c46f90603f23295a43184e0d3fa5e57c397a4e2f79cf965c10ed'),
-      (475, 3, 9, 59, 51, '408b8337a05b27c80a7669636a55be5f03be46ab37d3afaf96f9e1e6f1be2799'),
-      (475, 6, 9, 59, 51, '5257144d7e3c51927b4d4294842d2464cc84fd3add87eeca3fa4433ad3aea65a'),
-      (476, 0, 9, 60, 52, 'dd06e20d2943d3e3b6d66f610f3920dad9f3c991bcab3378f9b831b5130a9b88'),
-      (476, 3, 9, 60, 52, '7b40287fdfeede9c714617830b9669a367b1d1dc4aaedcdd9b093d6f0485ddfd'),
-      (476, 6, 9, 60, 52, '99272dd3f81970d37bcf513798b185e8814bf7aaa85d424e141763c0d56b9308'),
-      (477, 0, 9, 61, 53, '5391a84161c686442b855de69fbfad4e3fa6d73c35c7ef6643d341326bb2fab7'),
-      (477, 3, 9, 61, 53, 'cc7b054b32594152e84678c3888af62977e5069b371fa32e70a744f268cbbb0a'),
-      (477, 6, 9, 61, 53, 'f841c03bf5f4bde1a1ea1eb8590296cc0f351d50429a9b53ece3846f572d4028'),
-      (478, 0, 9, 62, 54, '6b9daf4919308f779c4bc609711d2c16497ef3df03e097a07bcc76e66cf79710'),
-      (478, 3, 9, 62, 54, '3ecd6be68fcf2c8dc46c2f37816e9dccde8e3bcf02b0ad33b09087dc965ce5c8'),
-      (478, 6, 9, 62, 54, '5fa37f9dd8420d484b6ffab0b92a44d2dd09a5c31777825a81a3aa7c0bc75567'),
-      (479, 0, 9, 63, 55, 'f90316a1360afe18f1f9eb35a8da6e8009f734170088514d9e526c20e2ba1ea4'),
-      (479, 3, 9, 63, 55, '61e51e3e80f16da1e5c724137aa52a7b983c721dd1d9f4fb502aadf956b1d338'),
-      (479, 6, 9, 63, 55, '54dd1a09088fa043c42f23d8a71af4b984e6e3f6c73a1250a36c52113303096f'),
-      (480, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (480, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (480, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (481, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (481, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (481, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (482, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (482, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (482, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (483, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (483, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (483, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (484, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (484, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (484, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (485, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (485, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (485, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (486, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (486, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (486, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (487, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (487, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (487, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (488, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (488, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (488, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (489, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (489, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (489, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (490, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (490, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (490, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (491, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (491, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (491, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (492, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (492, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (492, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (493, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (493, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (493, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (494, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (494, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (494, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (495, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (495, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (495, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (496, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (496, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (496, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (497, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (497, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (497, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (498, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (498, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (498, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (499, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (499, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (499, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-    ],
-  },
-  'q_video_mp4_frames': {
-    153156: [
-      (0, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (0, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (0, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (1, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (1, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (1, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (2, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (2, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (2, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (3, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (3, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (3, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (4, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (4, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (4, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (5, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (5, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (5, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (6, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (6, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (6, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (7, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (7, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (7, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (8, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (8, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (8, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (9, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (9, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (9, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (10, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (10, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (10, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (11, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (11, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (11, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (12, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (12, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (12, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (13, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (13, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (13, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (14, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (14, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (14, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (15, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (15, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (15, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (16, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (16, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (16, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (17, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (17, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (17, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (18, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (18, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (18, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (19, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (19, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (19, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-      (20, 0, 9, 36, 36, '8e2267d9d5b3887b3155ac1c3ea2f23f34ef2072b48e7ea2a0e2d826699767e1'),
-      (20, 3, 9, 36, 36, '432f1b390e55ce9e52fde23ef3fac4deb7394d7746e84bb34b7a7fb14b40ae80'),
-      (20, 6, 9, 36, 36, '39b419cf935494540e712c2622589962f429f793305e8f1e9b6cc92a28b89701'),
-      (21, 0, 9, 37, 37, 'bef64838d49ccada5c0b459946c321cd91b0d897895270bab0e69bfe0a1c4186'),
-      (21, 3, 9, 37, 37, '241c1b8b05fbfa04d04ca702ef9491ba58d0f3b4dff52734abe5ef94cd9b9636'),
-      (21, 6, 9, 37, 37, '09fba7228703b4160dd29da3ce6a4715ff93a9c0003b670d550cb73baf034701'),
-      (22, 0, 9, 38, 38, '932db3e008ec4488ce17287f81170a7862796c650dc271cae7b0f70261dfa27d'),
-      (22, 3, 9, 38, 38, '33740f21df6eac2624d9e188ca5356ef20cee44befb496fbbb2ff0a3fe28e0aa'),
-      (22, 6, 9, 38, 38, 'cf86939424e249d6d07439c7fb5c996d689ae057b644d93c8b51dc59058774ff'),
-      (23, 0, 9, 39, 39, 'c2ce2172256dcee2e4c13d86684c37b9d633ea43599b80ee81d4a6019ffd5e80'),
-      (23, 3, 9, 39, 39, 'cba1c95fc94d5f06eb313e51bcdc6b9ab1548bf551d41b2480332795de8d2adb'),
-      (23, 6, 9, 39, 39, '7985683d280f5b4a6bb910f562537a093498bc76a447c0370dabcc5d8e3dfa3c'),
-      (24, 0, 9, 40, 40, 'ff657e41afc635ff08e0a4abab525368043258df941e1d2ed25b482b096e7824'),
-      (24, 3, 9, 40, 40, '761c108367f657b8089192b9a22176fd36d287c590d6a8b437880243809e0d90'),
-      (24, 6, 9, 40, 40, '7bd196b5358ead0a4538348c04a26344c35fadc8c083a6f86ac6d6c0a4ab8c3e'),
-      (25, 0, 9, 41, 41, 'a24bb88ed1a55a5eb96dabaa64525de563901413639d240e6151c9eedbcf231e'),
-      (25, 3, 9, 41, 41, 'c588f878a531db49cf9ea0e87876003a55452529365538955d3ab42782be47b2'),
-      (25, 6, 9, 41, 41, '1a821f7233989043862206aa25bd30504a8dde18a20032e24493a657eb2ae036'),
-      (26, 0, 9, 42, 42, 'd02923e877543df074b5efdf26a5b8065101abd185d5916d59c6a67e54a7177b'),
-      (26, 3, 9, 42, 42, '84a50ba70c76060f329e1b22071ddecc8803f7ab083bd899c5c96218ab0c93f2'),
-      (26, 6, 9, 42, 42, '1a6b741e8e1846f896fee954e422b48c30639cb0c050e50337b8e646f457e8b3'),
-      (27, 0, 9, 43, 43, '2c701d56941329b13669a9d35fcf15aca518194cf8c9bf23be10ea1fac68da93'),
-      (27, 3, 9, 43, 43, 'd1dde2f7cb06e0b1eac1c0a0fd44edbf50ab53cf2bdd94e97aede3c0e7ae5ca2'),
-      (27, 6, 9, 43, 43, '194bb921b71faf4154cc3145afc1652ee1f5cbb5271b59bf36a44c18954bd51e'),
-      (28, 0, 9, 44, 44, '157387272447ffa6bd4dffe247f0a8ed6cced1afefbe294e9759207dfa928edd'),
-      (28, 3, 9, 44, 44, '6032306c5855632d26d21d5e523146db323d322d52ad96ad13b815529cd55906'),
-      (28, 6, 9, 44, 44, '1e58ef598b916f1092d2a576204324d9628736711610d4d8b28faa69a398565b'),
-      (29, 0, 9, 45, 45, '8ef00e70eec04188432ee3cdf06aaf5f8a70b67d746d723e779e37cf255e7e57'),
-      (29, 3, 9, 45, 45, '47beb753ca5d22996f2613d216851657dbd32346eb8b8ecfde77ba2a3e475305'),
-      (29, 6, 9, 45, 45, '03721557b78b5fa383d9c81488ab24b7d033bd1b53537ff6ae9de9a487ee23e0'),
-      (30, 0, 9, 46, 46, '1a503cf36668310c171d3b1908e16af2c79525648d470c3247d49286fa13c474'),
-      (30, 3, 9, 46, 46, 'bf86ce3aaba71a7d0e823339d11d52e5db6adfa69c00c5896eafe9a5cd73efdc'),
-      (30, 6, 9, 46, 46, 'a38f000d6474d7208c6a5c0ac176a4b9173c9b8759a42f748ad1dbaafc48ddf2'),
-      (31, 0, 9, 47, 47, 'e01c89ddf285a808cc59dd30341979021e680880c09128e56646893853f8c8a4'),
-      (31, 3, 9, 47, 47, '08f7f319765523f1f252f09c4922d7b5f4ab489430167fa3a1670511fa1c12f5'),
-      (31, 6, 9, 47, 47, 'acf788970d3826a2e336da1830c3cb3f47bb8bac47549f9b3117cf2fac70496b'),
-      (32, 0, 9, 48, 48, 'd93da555eaaa95d22d99ac77e1940624cfb87dccbd77c719d4068ff71c6a9782'),
-      (32, 3, 9, 48, 48, '957078a4fe289fe09f3fa9e029d1f3b8e0208bd91719f02efd9309b7d0cbc416'),
-      (32, 6, 9, 48, 48, '03384c23f91a22d72bd94aaf4248f2403f50ba91d87e947ed3666567f488b81e'),
-      (33, 0, 9, 49, 49, '539a2fccef6a006d4f517540d56793e9be1341e8dd53341ed41913342e849d1a'),
-      (33, 3, 9, 49, 49, 'a82f9b8d65fec085550f13f943c37066e8b72acd26315964a86c58bebe5a5857'),
-      (33, 6, 9, 49, 49, 'cb96c5e3e5b63b442382f3c877dc48348a7bec99a68335dffc065ca75007cfd7'),
-      (34, 0, 9, 50, 50, '34d6781cf6e48453714e57f44273cea8073587187cbfa582df2772fd4b05b0ab'),
-      (34, 3, 9, 50, 50, '463b64415db029d7e867b9737f8f9dd1dc652abe7c304ac64d5729246c476873'),
-      (34, 6, 9, 50, 50, '12a31686a0dfe8c4eb3e3c63c791513289192576981c081066ac8bdcbe711d37'),
-      (35, 0, 9, 51, 51, 'af5d49e6e42328128857a3cb3b064c14ffaf680b2ddc27243719988f6cf970e2'),
-      (35, 3, 9, 51, 51, 'e2dd68fb3381d341bee0fa68583b558387027067ef9f83bb8cbc6d0dcb01ff7a'),
-      (35, 6, 9, 51, 51, 'd1aa44c84feea301ddfcaaaca1f6b381870bf6b6fadef66b3eb6bb1eb3e8a540'),
-      (36, 0, 9, 52, 52, '1eb2e7bc51fd9dfb1ea02c1675f784efa7087855c1f791fd4bd92d99aa2f99a5'),
-      (36, 3, 9, 52, 52, '23026a91ce87e0f535091463b23cd61ce28ff13ebf0c0bbdfdf77cd30c2870d9'),
-      (36, 6, 9, 52, 52, '5a8d6e7eb10c094ec82bc6b1e7ccf4b35f0443a6c2cd39bbe79103869999505f'),
-      (37, 0, 9, 53, 53, 'a7db595a870b83d019aefa8bf1f01f20337b958339196e91e7c2c75ae51f65ec'),
-      (37, 3, 9, 53, 53, 'bc08b1743c518314df8c9fda918f9ea908fe9afb45910dcc51222a1ccffd6e66'),
-      (37, 6, 9, 53, 53, '1056d0defff8c1ad62c6444c15a6887fc7fd388c807a8e2b1870ad7542c68b09'),
-      (38, 0, 9, 54, 54, '2afa136a26802e24f52b6f99fc0d9636ffd4e07a2c360def977954cdfeaae085'),
-      (38, 3, 9, 54, 54, '24a1f9c8c571c1d034b5a5e0925ccefdcc0bf291b51da8179e8dbd55767b0750'),
-      (38, 6, 9, 54, 54, 'bd0a89ed8e89b12f8a6d0715b2680cd54f41bbe63af38f6974df40bfe7a1546e'),
-      (39, 0, 9, 55, 55, 'c089c997ea965416b0fda611986b9032fc64d0078e2e7a63ab02070ed4d4e06e'),
-      (39, 3, 9, 55, 55, '232dbf89d0e92fec24a30c84cedf3313b8e8c451f22104c11a1c4377e571771c'),
-      (39, 6, 9, 55, 55, '2628bccfc229f0b8b998c5b4a0321f83c6f62d31785d21bddf4256f7e851c7ea'),
-      (40, 0, 9, 56, 16, 'b376679df70fc00756fc58803d1182a2433e3d48dca46271be119e682a843661'),
-      (40, 3, 9, 56, 16, '4d543005d7875e425292ab3a03a1cbd3716628ce1219913a423f6950673685d0'),
-      (40, 6, 9, 56, 16, 'b0c6e0033f1f2eb09f7017c7bef99d3905094878d51af055bd72a05e91f84771'),
-      (41, 0, 9, 57, 17, '8dbdb21b6a2067abed2697673eb4048d44ec0ac7eaf1e7972265e7718c2461c7'),
-      (41, 3, 9, 57, 17, '9dadbce8af6f63dc28c75eb5e8f70b0973a891a715b3e3ca9265cee2ec1119ec'),
-      (41, 6, 9, 57, 17, '5c37df3c677e90e8e4b8ad760e7a9d7122e49e5f8403b2b369e2c331a15bedfb'),
-      (42, 0, 9, 58, 18, '2088f95afb21412ce9b2c985617aaaea649044d5562ac6752df8770d3c76134d'),
-      (42, 3, 9, 58, 18, 'd110b9607622a23592b492b42e0ccebd9328b25914e4f61480a088dfd8473d7a'),
-      (42, 6, 9, 58, 18, '331ee14ea9e707bc7de301bcfa7368e21fe45aaaae3ace7c7532086dac16f80a'),
-      (43, 0, 9, 59, 19, 'e84e34dc4b0f15c87307052d7aa48d70a851cfa796e8801cbc2c4d576cad97e9'),
-      (43, 3, 9, 59, 19, 'dbc3a5cb51ab019ba1ec9dd841bc5584c5ffdbf99373f187e0386694680dff96'),
-      (43, 6, 9, 59, 19, 'aa1a6c4ee7805d4fb8bfb8723e715a1679c26189043dc0de91a3432b97274e0c'),
-      (44, 0, 9, 60, 20, 'aa3cda610485f81e633e41b84f8b108da189337596527d7e82b65144132e311c'),
-      (44, 3, 9, 60, 20, '0b249ef8a0a61392989855f01aada4462728d4cdc34147165767a1a2b66d4d38'),
-      (44, 6, 9, 60, 20, 'f023a645b65fc073fddad85eb2a7fdb011b49acb4e00f69c1d4a7cace4b6e809'),
-      (45, 0, 9, 61, 21, 'faccdb6c764dd6e266bd72bacb2fb3443f8b79dbc220513d13c914da52d79cfc'),
-      (45, 3, 9, 61, 21, 'b7e9bb82ffbdba377a7d80d6d50c2b245134028581e8788ff73cf6673398c903'),
-      (45, 6, 9, 61, 21, '535d009cf1eb24cd490dc0b9372b61653ced07f533cb4d0aacb0badf6a182ec7'),
-      (46, 0, 9, 62, 22, '6fe1806e79856aad39ff3a3ec3da326f3ed3f76013d34d7078763f44d62593f5'),
-      (46, 3, 9, 62, 22, '61fce86c9ee6f09b00a6970e9ce448658aa4efc70d9dc52b69e214fb11803983'),
-      (46, 6, 9, 62, 22, '9154d0d1abe116a73cf1ce17f90261f32a4ee82b47f1bfa0968c394b8de314cf'),
-      (47, 0, 9, 63, 23, '7af875c080872235b2f205194d12085ea60120beae0c46e90a78aabb2611da97'),
-      (47, 3, 9, 63, 23, 'c8dc468cb50f3c5c32299b5ecf5ac7857b3e80b712dc5545a1b896681be505e0'),
-      (47, 6, 9, 63, 23, '0b883d0b25e89f03d7a899473a8a663fe54fccd66ff0220c2f88c8328fead8e6'),
-      (48, 0, 9, 16, 24, 'fa7613f84cde3ebc469a327e00ae772a647f3e6c0237e368e1d7e42cb3f67c3a'),
-      (48, 3, 9, 16, 24, 'bdbc57a5a5ec359cf039e38c83adfed0f84dd6b0dc365d29b24d8458b88ecf4c'),
-      (48, 6, 9, 16, 24, '551dd18d551dac9be38b64395d45c5f7c7b3d1f1845097623fbaaa32c6a25f17'),
-      (49, 0, 9, 17, 25, '5abdd05bcd748098c718c61b74ffca55333bc9eee7b0b2c86a3e3ca05a29942c'),
-      (49, 3, 9, 17, 25, '0a515ea12cc55129593e6b7c30ccc3007373568db556c065e7f4987e94ea4876'),
-      (49, 6, 9, 17, 25, '435bd382ddc22bdc3ba6761c69bb52dd92939dbe748e41947228cdaf5e805b53'),
-      (50, 0, 9, 18, 26, '96119b1e8840431f42dd80a1d129f9a79ed0bfde6665f41103b569c15915d38a'),
-      (50, 3, 9, 18, 26, '1ec0b9fec820dd6fbd77d825f9071bc8a1a793f2c714a7b539f8dd3e2aaab462'),
-      (50, 6, 9, 18, 26, 'b0ae413da840ed115d4339db976ce9234b1c570a074d56ffb2a3a2cf2f036fa0'),
-      (51, 0, 9, 19, 27, '6adf155578c74ab47ebb50eaa9011dc017a6137c27ef5f987072d9c3012b9994'),
-      (51, 3, 9, 19, 27, '910e3f298620d5a8ded66f57032b78f4dd0a202b63578f44a72a9d2d67bf6190'),
-      (51, 6, 9, 19, 27, '3db85052a1f54481fea8cbacd6713b18702ebed1d20e96b22581133e49361b20'),
-      (52, 0, 9, 20, 28, '158218014d9bc35b565f0beeb974d059a49c86d31dd24d913d68ad4068fabe7c'),
-      (52, 3, 9, 20, 28, '08473f986441151a57de1e006b02b414d740a3d3ccc4a27999473f11491a3df1'),
-      (52, 6, 9, 20, 28, '10feec623acf88e22a0a8af7ccc1e7d21438c8f2f710c9871da12055a9ec65e2'),
-      (53, 0, 9, 21, 29, '7285a406223a2da3dc6452830c784aaf381c2bef887f1196044cbfb06e0f732a'),
-      (53, 3, 9, 21, 29, '3c3069bfea3f89c3b74150b0de54390cd514378eedefa8b07833671224df9256'),
-      (53, 6, 9, 21, 29, 'fa71f023cdffb2acd89235125df9a67c0914a96a71b44aa465eb6fc910451f59'),
-      (54, 0, 9, 22, 30, '5b394734dc67f65463477f9b02eebe1671a68ec7b2e55f544156c8e46507ae3a'),
-      (54, 3, 9, 22, 30, '519e294008074f9ad42dc74bff6ab7d6588b6fe46c2c8fd3a34e203a63b2a4d1'),
-      (54, 6, 9, 22, 30, '16f4ba5e3fd30dd411293cb1c15b6e2e186e635d8f9500296a894690bf879934'),
-      (55, 0, 9, 23, 31, '1228f32113a078f587e18326bc8b8409ab1abc73562c13931d0d3767ba77145b'),
-      (55, 3, 9, 23, 31, '3bc7bfd72caba3ce4b90d8d8c22b115871cc4c8316e40d111f88bf9531c48007'),
-      (55, 6, 9, 23, 31, '9b46b7204bbd0c878e892518cdee8fc9c4055b98219dd2fe9147f68068f66034'),
-      (56, 0, 9, 24, 32, '0bed753309d414baf564eda241fa1627575927c7efe92552f3fb9956a4297649'),
-      (56, 3, 9, 24, 32, 'e6ec2966f5cf0fcfe201f5762dbdcf2c4ec3e3dc2ca2e70d7665e295e069c1b6'),
-      (56, 6, 9, 24, 32, '04be33115728d25d8b89ae08c6073a6043c14e79a83b9596b08efad545f71f31'),
-      (57, 0, 9, 25, 33, '9fa91f3fce7341843e48ceace516bd08da710e7cf5074fcfe51f12377db13438'),
-      (57, 3, 9, 25, 33, 'd9b271d5a067594a6dfc1170e1a60c9aa5bd473e2982333b7bc26980724bc377'),
-      (57, 6, 9, 25, 33, 'eac2961ea609f2e6eafe50368faeb46d2da765fc609edfba69278b2c03f59bec'),
-      (58, 0, 9, 26, 34, '5e96039dcfc56f38422a36c03cfb810642de6df810825ec6e358e88ab0e8cd2b'),
-      (58, 3, 9, 26, 34, 'd35bcbee9d2fc86f3f2e290e0bf5d6deeaef42f9adf25713239cc5c4ea4bf394'),
-      (58, 6, 9, 26, 34, '1bab0d37e7f0098941e372ef4a45d413e7cfa8cc01760cd3c38ad7a57edda867'),
-      (59, 0, 9, 27, 35, 'ca9800db715e24bad76ffcfa973242dd0b9eb7d73b51f1faceb69c412a0c5e4f'),
-      (59, 3, 9, 27, 35, '9ff75062bbca0570cb8e72ac45332ab80e71ede5d964b67a784ef73e9c90b392'),
-      (59, 6, 9, 27, 35, '8265c450c7daff3c1e9778d11a048190222975ccb6129a0783feec0f2fa54174'),
-      (60, 0, 9, 28, 36, 'a721509c60a5a76bbbc11ceb92823f21b2b9f5fd000d18c602f715221b903ef9'),
-      (60, 3, 9, 28, 36, 'dcbd9ca2e1781415b9ec5788e690863dea5612664beaff3389e5e1d892f4890f'),
-      (60, 6, 9, 28, 36, '3fb5156ccd5583ad79c81cdab97382c2c899e4ae2039083f67c302e5315aac24'),
-      (61, 0, 9, 29, 37, '9a2a7d7b54434c1d86c9efde7c86fbcc29a4e3d0d19d1cdb3c836347871022cc'),
-      (61, 3, 9, 29, 37, '557249e1ead2188dff8329ae26849535dc10c872ddb651cfab353c18cb5af861'),
-      (61, 6, 9, 29, 37, 'c54227ad4c58c39eac0572bf59d3a8b514b63ba4402bf71ec9e694607f8b9863'),
-      (62, 0, 9, 30, 38, '4ff3e54d4aa752cfd3e6a06dad92c426134708b684b1104ffce983f893a92a96'),
-      (62, 3, 9, 30, 38, '2b59123ef34cc7b768662a4dfb039c8500a6accadd58434fb8fca082b6ac2e20'),
-      (62, 6, 9, 30, 38, '6245c6d5ec6c392fdaba7c4e19e4f5c278d72be9329137fd56724ea22e98c203'),
-      (63, 0, 9, 31, 39, '23cbe3b187375fc3d87f8e548fae99c6badebe003507437099d575f75cd114ba'),
-      (63, 3, 9, 31, 39, '4ae5f7b939a9a9156c3b42494f32aa3b127228c5eac6e2a804b189cb25a02b56'),
-      (63, 6, 9, 31, 39, 'af803631fc1cde9efa98cbf705afc2401f5762407a2300737558885d748e315a'),
-      (64, 0, 9, 32, 40, '1750967e9c5a103616d7403621019ae76be133a01c1dd6e05d511f80e7fbc43b'),
-      (64, 3, 9, 32, 40, '1869a6de2f4a0514bfd241989aaf2e2489aaeab26229e467ecc3af353ab0e296'),
-      (64, 6, 9, 32, 40, '4b3a8f5b5b90bf596267168561aa67b7429390fc1fdf256ecce0f8101c5d1c05'),
-      (65, 0, 9, 33, 41, '86b9a854c26d65d8654ad4bdf99e3af46736cfd2aa52f31441600863e48990dc'),
-      (65, 3, 9, 33, 41, '68e6a246a467baf89b5b52ba998b1292e42f4388825e3ad9c492fe31b83f0646'),
-      (65, 6, 9, 33, 41, 'fb2389d1698d4971c1d05d5c4bcdf88489b9836f60107ccba830c8509c0cab8f'),
-      (66, 0, 9, 34, 42, '55a4a359e245c8ccbc9c3772073270ff80c0829cc453ba359c3ac62bacd47fe7'),
-      (66, 3, 9, 34, 42, 'b1af01c8b3fad6f922583311a6611fec0d4900bece3776823174ba33b6d15bfa'),
-      (66, 6, 9, 34, 42, 'c32cb8b4b586513d2c4e25b007bc16a85931b665b2bb3ab723c7a6f78290bd21'),
-      (67, 0, 9, 35, 43, 'a9e9f34f84af6a9cea23e5a4e310b41452200a621904f3c45cd3ec9ec6c2a07e'),
-      (67, 3, 9, 35, 43, '39f36f3bbad047e2d06a68dc681ac6cae46dac9b18ebf8c7a76e663150faf64c'),
-      (67, 6, 9, 35, 43, '06bc29c869a670058d994e6f0ed24ab5f98cdf3a3ca35d78cf9424170f16e179'),
-      (68, 0, 9, 36, 44, 'ed7b3a76d5d4447aee2fd7e5f638ffdfe172c0acbc7534a07a6a5c93d972de31'),
-      (68, 3, 9, 36, 44, 'ad14d7cf62a608b0e3d5e8a8ef5335c202a66f1c21d6a232879d44138cad3a97'),
-      (68, 6, 9, 36, 44, '6bc089f90d6103029d4ae2b126ef8476c274963a31408b6b93339a1ef54e2a9f'),
-      (69, 0, 9, 37, 45, '631293f717c19489de28ce1175cbca7a0fb9abf3c09bb81ef183233c11b26cdf'),
-      (69, 3, 9, 37, 45, 'c975fe95a7bfd2f74c875d837734ed3667f39b1300ce1aafa5057e60f8a0d88b'),
-      (69, 6, 9, 37, 45, '9c6f116cbe663819ab933cb56929febe0abaf7162f829cb775afd2f81843d071'),
-      (70, 0, 9, 38, 46, '5527ae914e2126800cc79f48aa56d9c76d2ddb552fcfb3ae66ebd0ca51987d36'),
-      (70, 3, 9, 38, 46, '8ea93bb7643fafec8cdd413bed5bb4dbd93e82aad39bbfed57cfbf600e192d8d'),
-      (70, 6, 9, 38, 46, '95815902def3109dec348d5c3f555e892ea3e582ef76cc32536bb1ff3ae7d4e5'),
-      (71, 0, 9, 39, 47, '6b1cfbcfa532f8898f2d99d3d38aaee417d58821cb2ee92f26ff227c89d58098'),
-      (71, 3, 9, 39, 47, 'e59862b0e0a0919b461b8e5c8ed9f92a8eb31bf02b85bef3e16ad8dd0bd54708'),
-      (71, 6, 9, 39, 47, '4153c2d5395c62374155b9b909c74ae11b55032828aac63b829b41dcff9af35f'),
-      (72, 0, 9, 40, 48, '7a3741d4252b0c352794df060203a360ddadc1fb363dbdb720a9efe2906105b0'),
-      (72, 3, 9, 40, 48, '0a4441d6c8e8601e606cc0454e7600f31f7a64632bf5e44219be212738a37d5d'),
-      (72, 6, 9, 40, 48, '6805870ac7e60a876631532cc7bce5982c74134d1c8af3da7e58782852d2a4e9'),
-      (73, 0, 9, 41, 49, '1d477fa13cd4bd445fd3cc38c991a0734855f73a6d7f3e519f74a8ece74417b0'),
-      (73, 3, 9, 41, 49, 'f6154934c8b1f716d6515a21f04263672290f3e3f9dcb7bea1d9a4ee2e50bb88'),
-      (73, 6, 9, 41, 49, '230f130df28fd8b3e99d71cfac09f75c0e7a9c50fe58111d08c856220b44302e'),
-      (74, 0, 9, 42, 50, '6ee3f1907452b3fb351a67e03f0f26467ee9092bc863bbf7dc2b6d51ad22156e'),
-      (74, 3, 9, 42, 50, '36405d492e6ae0b4d51d9f37fb0808c123847ac16fc00a8ec93e90e5592d9c38'),
-      (74, 6, 9, 42, 50, '2feda3a79b8f5af2ff3c02b2c4ece79259e3d2c2c4dc764bdd30adafb7519a33'),
-      (75, 0, 9, 43, 51, '4534838c832844fe65fd20a583cb1240d39c5969ed1b63ec6fc30b5dafaf973b'),
-      (75, 3, 9, 43, 51, '44f50763ee5d47b7bca02d7b94d01fa6c35ecc9d4e56df299cb9a9c265e191e0'),
-      (75, 6, 9, 43, 51, 'd3a61c9691cf1c18c7fd662cc2f18238996700fff7d0edcfebaa700cd6618de3'),
-      (76, 0, 9, 44, 52, '39e908402c9f8c5781fb47469d1bf746c14d704786a0825fb3d4c46271a08684'),
-      (76, 3, 9, 44, 52, '38f871d78fe138bd2b9304d7b5362125a930d5afb85a37a2bbf38f19d12832b2'),
-      (76, 6, 9, 44, 52, '01eb702da8e48cedf2a8a861b3beb6144df28ded2bfc71774543428f56721cef'),
-      (77, 0, 9, 45, 53, '9d91d3a1120fc0c7da8b222f566ccd0ecafd3dc16f662b72c204c776b2f5f358'),
-      (77, 3, 9, 45, 53, '8978687db0957c1dbe3353c42d640d1fb76f914f979fda768169d74f8abc194b'),
-      (77, 6, 9, 45, 53, 'fb3f7566ebc87105e321fa8de4f59eb25daff8691a15e2536dca631ceee8cea6'),
-      (78, 0, 9, 46, 54, '23f22dcc3235881a3940b7cdec6792c0f053427a694747f21514d6b225d166b1'),
-      (78, 3, 9, 46, 54, '35cd228b4bf0cbbff96f478bae471028c10a9f271722e339801a4775c7015f80'),
-      (78, 6, 9, 46, 54, 'd203e4aa1b587fa319cbf87a6513a545e50f528531a7157ad42146514580ad17'),
-      (79, 0, 9, 47, 55, '5d21989acc6889569ea553064b9958d6ffeff82c2de85421f8599dea49a7e476'),
-      (79, 3, 9, 47, 55, '6274a2314b4f78e210dfe3965dd1a7ea7f82b8a844e4bc57ea28fb079185dc7e'),
-      (79, 6, 9, 47, 55, 'ce9fd857c4fe0586637b0c340d1ffe96e56a2132d746aef60585df8afffb8882'),
-      (80, 0, 9, 48, 16, '68f020bf50aeb00a04872f04f8f39d8f7d470e935f2e061e597543360596bff7'),
-      (80, 3, 9, 48, 16, '62f15caca5ef32d7250ab7849f9a138fe4dafdd45ec00f80df6631151e4e3691'),
-      (80, 6, 9, 48, 16, 'eb90e0dc55b1f8a9f7b7569b33d09097c2b9a61d0b5851048f39e858a5212fbb'),
-      (81, 0, 9, 49, 17, 'f79722e8faaa8aa36746b6d5a54ca9b221fce31f73c69616440bfb049e87f7f1'),
-      (81, 3, 9, 49, 17, 'bb62010e5365f8f0798c858e87115abedb9f459f9f11c4ab9eca27b76d1cc971'),
-      (81, 6, 9, 49, 17, 'e9d681fc1a63d3115296d197818fa99f21ff6a2ce05a4435b9093c3b3c437936'),
-      (82, 0, 9, 50, 18, '819fffa21e32a5c32c37ec00a2ee326bf5dfe25d76e43c7c2b649a12b80c95e3'),
-      (82, 3, 9, 50, 18, 'ad3255bc87eb4ecef869bd7de9ef177b86a9951a8aad6f37c9287401b4ac1473'),
-      (82, 6, 9, 50, 18, '6f348e9aff6799d3e5beba62ceaa1c1f31428e06d1a9dc18bd5bf364c0f0241e'),
-      (83, 0, 9, 51, 19, '7ea0d1349fbd6e31d562b2c8486cd4e73df3daf1c8c63ba8a16382792fcc84a8'),
-      (83, 3, 9, 51, 19, '24c00a9f3d4b11b2e1a83d32704c37a6e1b5e569e488dcf7dcc4b17805765d6d'),
-      (83, 6, 9, 51, 19, 'ade93aed7fc55e4b08f7c2fa875ff415826b763bdc6d416c52b4617f1200e34c'),
-      (84, 0, 9, 52, 20, 'c9750fd71d827678dfe81b55d6ef17c12453ee0eb05c8acb487bec6791052322'),
-      (84, 3, 9, 52, 20, '219de635026f0f4a07fbd7b687ca70b37f1d1e38686cf770431271a276b700f5'),
-      (84, 6, 9, 52, 20, '53c40a9aa597d7e0009de790a9c6a3c575df9d5a9c200368c1a0f2e5a3c3d9c6'),
-      (85, 0, 9, 53, 21, 'c23e6e1b28206ee891f6e2f0c17a1152ba4b62f991f540acc3876b78ab579950'),
-      (85, 3, 9, 53, 21, '50aaec1f20c6d18d26fc2d4967af3d30942dcfb4819f3e302eeeef19974751ca'),
-      (85, 6, 9, 53, 21, '133c7672751a1bc26e5549b812dda65f0a3fe746f48b952cba06d3d29abf867e'),
-      (86, 0, 9, 54, 22, 'fa14b64a2197bbd9090eada04a10d834a7fef4408bc9260cf299b526880d9bcc'),
-      (86, 3, 9, 54, 22, '8f6c55c79b6577635ec1511ecbc6f78c0989e067ac2622fb7b825fa80151f66b'),
-      (86, 6, 9, 54, 22, '4d5e65f3b0f8b00aac7be9338c117ed6052ba5174d8a20c83381e27cca5a587e'),
-      (87, 0, 9, 55, 23, 'db1b98e74cceecf628ad594caa9b114b1d2fb24edf3a5c0a5042c635c750a87b'),
-      (87, 3, 9, 55, 23, 'dd5a51418365d4674e7ab9f25ab94934d82d5702d1199f23b9676f91b5d747e8'),
-      (87, 6, 9, 55, 23, '3248260f472d04e3d6f29dace769bef5dfcc3b57a147844f2d9dbdd16c8d19f8'),
-      (88, 0, 9, 56, 24, '14c6cb17ae0c5a10c3cd289bdf2f936a6cc64c3c33d2054ef0b5864d1c7f8a68'),
-      (88, 3, 9, 56, 24, '8e8957970afdcd493f91c0c3baea125109fa4dc9a127916812340b5ebb24cb4a'),
-      (88, 6, 9, 56, 24, '552a5cbc2aec3ef8193b64a084977f019dbd9e0dbbc3afcf318ee38f006f09c5'),
-      (89, 0, 9, 57, 25, 'a5c38ff14e9d719675355a9bea47a578debba8ee756e807d117d541fa8589fe0'),
-      (89, 3, 9, 57, 25, '985a017c12f20811761e6c3b1a4fcbdd890dec3edeff563a81370d5222e23b35'),
-      (89, 6, 9, 57, 25, '4c8a3144758b99c348e0256991ea0305de72c619432960238cc9fea24deb6e2a'),
-      (90, 0, 9, 58, 26, '18c399069835981fbee9e5b781689d77d267fee4a182f22c435e73f0ade1c895'),
-      (90, 3, 9, 58, 26, 'd94a40b0b331be9cc4b76dd7aa4a5ae7404c4d3d4f5004f306b9a91944ae4023'),
-      (90, 6, 9, 58, 26, '9323d693082b00d21bd10bec890a338c03413449a27f739459909310ddbda2b4'),
-      (91, 0, 9, 59, 27, '4fffcb25e04286876b0801a3740146766e2abdfe9fb6e0f5b3a4d63a6016aeff'),
-      (91, 3, 9, 59, 27, '129ba30819ae15d49ddbd42e1c4ec85901dc4225ee723474fc00e5c8038b59fc'),
-      (91, 6, 9, 59, 27, 'bc5d856bd497bdf32c7b3c67df2cec619efc00c04b94051089fabfe57a31a346'),
-      (92, 0, 9, 60, 28, '0318b86dce0306e15022116b4855f84a4857e452dd74fed9b90ecf828525f5cb'),
-      (92, 3, 9, 60, 28, '1b28b3340673b97bd4f75ab4cbb4503054828f04a4d83c24589ebd6ea858e3b8'),
-      (92, 6, 9, 60, 28, '19b4d362fbb249cce08ae987b4b94b3a1962509f01a031fbe57d4cc8a2630175'),
-      (93, 0, 9, 61, 29, '823098a7803fd8a6b35ae9d8f8b7d673596b633a68ffc549ccfd5295e02ab674'),
-      (93, 3, 9, 61, 29, '147b66ec1530e0cc9d50806a4a4d1364e36fcac2e4e5792bcff1f48c011bb6e1'),
-      (93, 6, 9, 61, 29, '2adbb2a87c1620a6adb0c6f25b466209b5ddd6ae05333bf0673793a7a1103a1b'),
-      (94, 0, 9, 62, 30, 'e1d3fa89f0620c307dc46aabae6b84041f1ac9b452fb326d095b9b12a1740ff2'),
-      (94, 3, 9, 62, 30, 'ce7c825540b5eae06edf3b0e69a83a3e88e9086546a55cc0d950de1707929adf'),
-      (94, 6, 9, 62, 30, 'fa20619f0a2c368fb3722a233973d481ce4a5adaa08ae100cbbadccb0e7352e3'),
-      (95, 0, 9, 63, 31, '9f64f1f39279d3a6a3f63b53c169a5d3799544335916f6921f4bf3c2d786bde2'),
-      (95, 3, 9, 63, 31, '562bd8f532fb71b7fd7cfa9bd7cc7d1186d2e26a414e2b94c85125d882818af6'),
-      (95, 6, 9, 63, 31, '7a0aea297e79f28211f06dc554514d2f093ae0caa9507baca52788fc2a3ec53a'),
-      (96, 0, 9, 16, 32, 'd435f644922490082ce186c00c4bbbe55370fff6da07356f1c2c6a6f078a2b30'),
-      (96, 3, 9, 16, 32, '395552329cc173f9554eae17fbf0cd1db9e91040a847aac0bcdf135051476e31'),
-      (96, 6, 9, 16, 32, '04e6e32e16675473172f12ae3c44cbc750091c2d5f8bd41bdf420c44e6178c2b'),
-      (97, 0, 9, 17, 33, 'c8740dce7c1f40f8c5e5099c7b0634f313dcbb49e0ea030a24d5b8e118734163'),
-      (97, 3, 9, 17, 33, '7b06030a46cf296df4e30998f126b6a06c337e8d5a744c232385f9e1731a9b34'),
-      (97, 6, 9, 17, 33, 'a921e9c0c121c27225c1f41c8fb5027dbae061731aeb19c7ddb1172376145b03'),
-      (98, 0, 9, 18, 34, '718de6ce44eb09af2204362aabfd3384b9c132414bc3b4e79e2933475af33b99'),
-      (98, 3, 9, 18, 34, 'ffad07482743f47570b8991fcb36beb8b8339ce2cb1b4f391fc94860fe9efdf9'),
-      (98, 6, 9, 18, 34, '9ebacf864ae03b8ddad143ce26899b1cb95ce3ad58daa67ed462208ae7c756e9'),
-      (99, 0, 9, 19, 35, '3bc692c035c7aff3356c9351e5354ec95a527085f39ebda0ea780a29c097f640'),
-      (99, 3, 9, 19, 35, '1db82243956ae6393c1f7b95b8ea27942239b7dd0eed69f3e3b2be43025dce0c'),
-      (99, 6, 9, 19, 35, 'd762ad07a72a30ccd4ffb33cb62b28445256e7bfa50fca97c47ce0cac09be18a'),
-      (100, 0, 9, 20, 36, 'e50f05089f51080f856e3c0b2685ef9dc8b1740dbbad8e614d73dfa4c3266290'),
-      (100, 3, 9, 20, 36, 'ec42b3b012d558684d9496bddb54bf7b55d62a5b56535af06cf5b7604f3da6ca'),
-      (100, 6, 9, 20, 36, '4f91cc43069b89561d54c2d5299b7dce0f4517a9f32af890a99a38e8e15bb90b'),
-      (101, 0, 9, 21, 37, 'f0ba6132ce731dc4bfb2238356b72a666e7b48fe3c05e10382544fad15604895'),
-      (101, 3, 9, 21, 37, '2f2e993155944157b2019ab4f2387c6acf7615443e72edecbdc5bb5880b16757'),
-      (101, 6, 9, 21, 37, 'cca6d4291c1357ec09bcea7cbe447d7d6fce002fed45c2438b476bbb9369401e'),
-      (102, 0, 9, 22, 38, '00a747eaa132d7c8a3c09f11d4acc3d0de2056a481a9371dec78b1047dce6ea5'),
-      (102, 3, 9, 22, 38, '0fad0a5b64e60cc9101f44b5a7b1c1318e5d310216bf1a582a44ed3a2082bfef'),
-      (102, 6, 9, 22, 38, '5ce66e6e39a0e474f7457fb87dd02b2afdbc8a76d7769ebe521505b07be47178'),
-      (103, 0, 9, 23, 39, '0a44123e28bdbede1ce730bf84ff6462c67af184e939d10ce8546059f6edba1f'),
-      (103, 3, 9, 23, 39, '19a2f07f0b43da9db32c72391b54f8c2a222b087e5ad92e893489aae9b2a42dd'),
-      (103, 6, 9, 23, 39, '1342059f7f9a824e0d0d03cf542db9ee33d3a0aa89e0b57e9cc283ab9eb788b3'),
-      (104, 0, 9, 24, 40, '587766bc3249b80c9fc35ea06cffb996079cd0673483480bc83c72b4e96ad0e8'),
-      (104, 3, 9, 24, 40, 'b6c7219574c76963c260480551e054102d8e4cfb1d1a63ee8339e9a335957d7a'),
-      (104, 6, 9, 24, 40, 'a63c2c187bb796c4aabfadb60ec6b1c76fdd586a0c0b2d2666d5e34c90397117'),
-      (105, 0, 9, 25, 41, 'e42fc03bd95f41d0d7ca6a29c576f8665fda4786862da6a762ce27ec4c0ea064'),
-      (105, 3, 9, 25, 41, '540e0c647db8d694f309b0d25e778ada14f0e14210a110d52f989b2a85c2a4b0'),
-      (105, 6, 9, 25, 41, 'a73c3909ecf1ada4b56acf1f61593a7eff03ded0a43974795734721f06f58d3e'),
-      (106, 0, 9, 26, 42, '63a49e592730d6892df41f711c5b881dc09dd09727a0bf30903fdf8c4641390b'),
-      (106, 3, 9, 26, 42, '79be8d123bd3e7dea41302e7dc999a5ce72118f2a0eb99f5452c3e0a13d643c4'),
-      (106, 6, 9, 26, 42, 'ed087ce086ac21228d3abe7819c659d88a9c7d58e10b5f0753e6bdd2d1fa6bee'),
-      (107, 0, 9, 27, 43, 'd1b6c49588522ebc6df0bc1b1af7afe9e153654ae4f5c96d5237544906a5c514'),
-      (107, 3, 9, 27, 43, '31398a8af6fb6bde43d6ecf657b0ee8d7e2870065856a24208fd552d34289d8b'),
-      (107, 6, 9, 27, 43, 'a9efc1e57207509da598640861c39621054774566425af238d28ed343dba6e18'),
-      (108, 0, 9, 28, 44, '2cb7b33714fab85b60f942fada6f421e1970c76987d65f7cd6be3ccd503d1b89'),
-      (108, 3, 9, 28, 44, '771eb7c954a8693c7c949765e4b07580aae53ccb5310588d817858fbda1f13dd'),
-      (108, 6, 9, 28, 44, '9b8681e08ca718538d63a1866b0927cf0f045fb050beb9294c96477ec8462b6d'),
-      (109, 0, 9, 29, 45, 'c28f6f19280b2ddeca3b3143302fbb2c12358a77981a98a2af4cc8c7c61aab5d'),
-      (109, 3, 9, 29, 45, '2d9281f22ef2518b0636b87e30117bbe8d7262d9847f5099bf39ca3f2af3f5c5'),
-      (109, 6, 9, 29, 45, '9189acfda59a135fe4c3fe830a2b47b866e0d0db65b4d0cd5395d1928ae1ca7d'),
-      (110, 0, 9, 30, 46, '7b10453e3f69c0082e7ebc129f229c5f580a33ee847c9202034e63b4678b9d6d'),
-      (110, 3, 9, 30, 46, '255fef801ecadf7ba0ae2636b89b34ce056b0643cf1bafa8799aa5ab8416d61a'),
-      (110, 6, 9, 30, 46, '1441627fd5c52ddc3db0a5ba1b9906dc73d4c435715d7ffd92bb9aabd723466b'),
-      (111, 0, 9, 31, 47, '2937e3390b941c2c76255ea46e3c7ec7ee0bc230bcd376d52963a8e1e46daeb3'),
-      (111, 3, 9, 31, 47, '93f51739fd251d89a12bd7069901e6896d33e57d00a73766c43aad739ce9e7c8'),
-      (111, 6, 9, 31, 47, '0083c0f1b988d4206842a50b86cd6ee9026b680d5ccdec96d3640d2cea2f5758'),
-      (112, 0, 9, 32, 48, '7b9afd84a16f814f2eadb5d8e8b2cabae35c50b5c6891cc0344ead1a6cc69404'),
-      (112, 3, 9, 32, 48, 'e4dd71b23c4693759cd03bb38f5212f07e2361fe47eb4424931be7b975f95cf6'),
-      (112, 6, 9, 32, 48, '8ca4fbeccd529ea36cf91959b3ffbe023543c9d747d7d7406b0461cdf9e9e3ca'),
-      (113, 0, 9, 33, 49, '3a6156049a83670624a3f0428d0ebf631721327ad0bed8a40dc31f68d96ab1e9'),
-      (113, 3, 9, 33, 49, 'a8442072da8362cf3a040d454d8654dd40995762471ff1361e59ce366cc85bd8'),
-      (113, 6, 9, 33, 49, '4747755b0ba1a59f20361daa77b6f1aad9d9b047dfbbbe4b5f551217aa8da962'),
-      (114, 0, 9, 34, 50, '90fd0f3ede3d97d5f96fb77fb1718ade20bdce1eef5704074415d22566489dca'),
-      (114, 3, 9, 34, 50, 'fa26003fd86bb6c8a232d0a49cef15f24c73800e6a742995bf310edbd107c0d0'),
-      (114, 6, 9, 34, 50, 'ef3d91a1286b5a55f1a6d44a8e0f0ab1deb7ca09ad40b7894529e13b176fca3c'),
-      (115, 0, 9, 35, 51, 'dca7d284fc43217ac6445607ed3b2163fad763297566adfa3936aaf138d64cc7'),
-      (115, 3, 9, 35, 51, '8553d3714295555b3b29efaef55d85d025cdae176d81ce954d5475cf8a8e6bcb'),
-      (115, 6, 9, 35, 51, '0e4d7e3b71329a12eb2ce4562b78b8bc1c4b192e47c0b2397d75da4a1aeeb620'),
-      (116, 0, 9, 36, 52, 'ed2df4df560ae35f96e06de8c8ecf0b20438266c17913a164ec813550c2f1e1d'),
-      (116, 3, 9, 36, 52, '5bb84bf0f5dda5347eb235b0b79a3ab61d595b8d2660d8d6c32b68381122ac5d'),
-      (116, 6, 9, 36, 52, 'ff1b2fabc8f97027dd0ca24c01877998d6d940821548c94499633428417f9dc5'),
-      (117, 0, 9, 37, 53, 'cd254bd7bd616f014d062affd4bf30a5a9ceab7707605d1d72f147cf1a5e59da'),
-      (117, 3, 9, 37, 53, '53d8c843cc005cc5872bc10d68e14efc3fe5f059c5a7fb2b1af58161e579bc65'),
-      (117, 6, 9, 37, 53, 'f41ee438b0e249910719622bb4e46896f7e625d3eb65f92a5bdceea208f5c12c'),
-      (118, 0, 9, 38, 54, 'c54e8f87bdcb3cb4c62b0e62902137b3dc9c57192f9aa421a1d7d904b9d9bdcb'),
-      (118, 3, 9, 38, 54, 'a60b16cbc6fc47de9017137f87a73d41239e14346f9a42d82528e5a1876d4b36'),
-      (118, 6, 9, 38, 54, 'cc70200e78367c2d0dbe7932246237f90bbf1f2eb559b2b98edd2a71c3b0b744'),
-      (119, 0, 9, 39, 55, '2951628a98327a9c6358972b64406f3344a40ae64ec40937d37fa814327143e7'),
-      (119, 3, 9, 39, 55, '87940fd9f8e84d794f5c3363cdfccb091a86356bd1d6e9fb321866f824aa2b8c'),
-      (119, 6, 9, 39, 55, 'd341201c9bbbe8ebb452b09ca27827690c7de2584c80cba0a59fa9e1ae3cc626'),
-      (120, 0, 9, 40, 16, '969fff50bcde4211daff0b3c7f3b5a49d29dba1c4e9b2b3708d54839fcba9ad9'),
-      (120, 3, 9, 40, 16, 'fc891fe927e275767aae98919e5233e10ec90495cd058299408a52625e289354'),
-      (120, 6, 9, 40, 16, 'bf287fb459bd4c393f7bbb44e7c9b2712da441d6b68337db921a4d2b6027ce98'),
-      (121, 0, 9, 41, 17, 'afd9e97e2bf1c4406ce13ac0d812bcf419f8261b5d2558c3634f9e293b14b84a'),
-      (121, 3, 9, 41, 17, '445ddc53fa96e6b10cdd49e00e8000c8893f56b16de3a25e87249dd9dac2bafb'),
-      (121, 6, 9, 41, 17, '423c71b2a4997c6536910f90c9d1a558f5f6a52680188c0b406babd61c227cfd'),
-      (122, 0, 9, 42, 18, 'af74c3e02101ebbc0382cfcc5cb963b56d6b1abc71510e1858ebd9c1cae39fdf'),
-      (122, 3, 9, 42, 18, 'b068ed5f3d3c69bb4dc26623672441bcbc04bf4d6aad9f9636fe522d32808578'),
-      (122, 6, 9, 42, 18, 'c1e82928161d1fa9a4afdb6a945458e72e7ccf8d1eb375a8abf226bfa5e1a51f'),
-      (123, 0, 9, 43, 19, 'ecf36c9b8efa998b06adf5167c1910c74f9e0301b267a313a091b5021a0349b9'),
-      (123, 3, 9, 43, 19, 'dc4acab29e207b6550b65a762243c2e10624c235436f71c627843179bc9a08eb'),
-      (123, 6, 9, 43, 19, '21e816858683d51e9b7a004346f0458ac2be03938ba0ecbd922bc3e6c46b08a9'),
-      (124, 0, 9, 44, 20, '88d99b7b36eb92fff767e76a1c711394b3f873c67e9c25e082d567186817d6cd'),
-      (124, 3, 9, 44, 20, 'd967a2debd955ddc7f5179d9a5bc6524ea448f8f44ad784368a7885363780195'),
-      (124, 6, 9, 44, 20, '18c48f30f5f9d44ab4224bf6b3d3928d77af916f15001088f7ad7933c3feb264'),
-      (125, 0, 9, 45, 21, 'c9dfd4603b35c39df1304c51245db19a2ed9894f14a39b11bf8ddb86bfd5f8f7'),
-      (125, 3, 9, 45, 21, 'cbd86a79f8536fda17d6c6653dbcefda7741c14fcb43f5d17f0f86c4ff77d7be'),
-      (125, 6, 9, 45, 21, '86a5bec9ec2f055d77dd9a4911a056a72f6facb8b0ed4864a63db4bbec040c38'),
-      (126, 0, 9, 46, 22, '57ab134bbd06d6f8812a275b953e802b8e51ebf2e36cb10f334bd3a1eb418404'),
-      (126, 3, 9, 46, 22, 'bb417f73bd87e99e14558cb12b0f2468f5a679158d41b35fd4e37a0d57020c15'),
-      (126, 6, 9, 46, 22, 'e757258a3e9d3eb8fddb5ecc74dfbf487497d802833185becb45ebd9b71890d6'),
-      (127, 0, 9, 47, 23, 'a350b8a33871ace19c1453ac1e091dd0111bafe65148ae836165f7422128a1bd'),
-      (127, 3, 9, 47, 23, '91910cb1b2c4677791cf749b2326e717b26d63927402b413fa6cde39721e4ec7'),
-      (127, 6, 9, 47, 23, 'c7554e57e9e8790f8b1b8a7f16a54e4a31a8c20587ae8e0f0d7950f32425dedf'),
-      (128, 0, 9, 48, 24, '8377c0986399dee7d6a515e0ece0bc7285ee99de1a0a08ea6cd7cc555cc45fbf'),
-      (128, 3, 9, 48, 24, '3f70055fab97905087607c6457d163e79b93a47c84b094c60f000f4a9e06aeb1'),
-      (128, 6, 9, 48, 24, '1abfe45e849b3b0d9a8e6b142c11b1dd2e0410fe7ad75fc1ce1b5bff6c160df7'),
-      (129, 0, 9, 49, 25, 'e0678696f9a508beebe7a520da246222f1d7d548bd5109936fd0468142ab0fd2'),
-      (129, 3, 9, 49, 25, '96adf5b36ed4c926f678f8687efe3d2f2571934be03c03794408d3fa00d5454d'),
-      (129, 6, 9, 49, 25, '158d48e81cc7f02260d945d6615ec49a72ae682f922e9764bf25b756619d5997'),
-      (130, 0, 9, 50, 26, 'dc9783435c2ccc2b0626213998071c3341ecfee0d52f2b487aa4fd3d5823e499'),
-      (130, 3, 9, 50, 26, 'b06f13000bd8afafb08d463b8d43845f36a7e2ae6493bdafa5a21e541284b39f'),
-      (130, 6, 9, 50, 26, '1efe932891f4b4cc748465ef9a198424aed5b95300bd12bf4735d0180ce772fa'),
-      (131, 0, 9, 51, 27, '88fd1b8d82ce09fdc4fa2373204470d1f2162a9aafa9dfc0d8f59c318b3d03cb'),
-      (131, 3, 9, 51, 27, '9b9dfde71a3d3e0d404fd3b5deea9a3c9ade394b80364e082a161667d3a26805'),
-      (131, 6, 9, 51, 27, '66dee915908a109016ee0b45f8463006434395dee206f5a24185bf88a786f775'),
-      (132, 0, 9, 52, 28, '91f610f5a189487a088b8904ffcb1501ede3990344cb6c4e1dce5faf65c46c69'),
-      (132, 3, 9, 52, 28, 'b0d3c4389c4fd23ce7cb066068e49ce4dcf55225c1a9089e042d9d988a34391e'),
-      (132, 6, 9, 52, 28, 'd051f8b150c170d97f9d3dd0d07adee6ae8c243752ba0fd332c390c5f20ce005'),
-      (133, 0, 9, 53, 29, 'f46631cc554116a5a076770d3187fb544ee9556b3ab5ac8d536cd5b374ea5254'),
-      (133, 3, 9, 53, 29, '2471b4ea9fd24f5312213ac725ac9c701b7242f2248ef148ea438d8bc7676d21'),
-      (133, 6, 9, 53, 29, '6b2223b87893842ec5ff2adea74a8df84a288962452110ec5387e09ff5fc22ef'),
-      (134, 0, 9, 54, 30, '47a7fa0f198ca1283ad679c4d1033cc58d3d68c7920a1153fb6ccc6c905f79bc'),
-      (134, 3, 9, 54, 30, 'cbd9d7ba7ac6a0cd00972c8960b4c3c56cdf3a526a26eb1f3bf4db3ac0e0021b'),
-      (134, 6, 9, 54, 30, '3ea3461b2cfd3e59628adbff596af8596353831902831d3dc881669ecf308ad1'),
-      (135, 0, 9, 55, 31, 'a60f50d4ea6570811280de3f6f124944c323a45a396abdee4948c6632e82ec0d'),
-      (135, 3, 9, 55, 31, '5c46abcd1056ddc25849c55881fe597549d248694bfd460b9aedad80b683e8af'),
-      (135, 6, 9, 55, 31, '8d4d881a9015e4954bf88f980e4ce142516ce20cd16c0c80e748d5d612de563a'),
-      (136, 0, 9, 56, 32, '89f05ca7b5718dca2e25a191b97dc9c3649d17af10ed70f689b4efd4df36de75'),
-      (136, 3, 9, 56, 32, 'ddd62bdba7747b0bb814275983c1d3d199e81c69c5d0c63eeea389d8483d763c'),
-      (136, 6, 9, 56, 32, 'f8d4dcfb72adfea7fdf67f99e8197ab287a53a530e686a76f10b891118fa6102'),
-      (137, 0, 9, 57, 33, '6397dea6638fbea535b505c3e128568433529179e36b5138a71b97a84616fb13'),
-      (137, 3, 9, 57, 33, '8b359f6b8f7d578f71046a9a0f6f7d6048b34004e347e4552f35398954ebbef1'),
-      (137, 6, 9, 57, 33, '4822a7d54d985b6eb7969ab61742660c94c0865cc8c681dd46e3e56396dbddda'),
-      (138, 0, 9, 58, 34, 'ce2ba1215c3989db29bbd18b70b89a957ee3ef6724931a02f0d11812abadf750'),
-      (138, 3, 9, 58, 34, '8e6a831e2ac4655c23f10faad7bb41efc241855d0157130771babdf2168e3e3b'),
-      (138, 6, 9, 58, 34, 'ef20dd95316b9a36fb28f1aa7bbec5af4c48e0c04086cc6fc663ca0f2f9f17b2'),
-      (139, 0, 9, 59, 35, 'f2855fe6addd308c361344446a74e8ab7d300c13f2802847de1f943d87066dbb'),
-      (139, 3, 9, 59, 35, '91594cbe5160d1408e18ff80395fd1973a8e04fb449fd5e76e6d84b13c26c239'),
-      (139, 6, 9, 59, 35, '238bcc44e4a01c519d442cd541378692055931b686e9f9f39ec884bf56f4484e'),
-      (140, 0, 9, 60, 36, '46b73e4ed410a8ef7d923b9e97d838c0d3ab34a9578c73195a2603a42f3eddfe'),
-      (140, 3, 9, 60, 36, '454d959e36c2d66dff37e0ee125bf5149d5ec99e7c7a6b5e66cd919ac141a1b2'),
-      (140, 6, 9, 60, 36, '73ebd93d77fc7e5c478244a09fcf20758f1698fab6c7f2c043b123d201da8602'),
-      (141, 0, 9, 61, 37, '58836f681640b9cb9908c4c092ca88ae98528be5722fdbca05496f4b642056a9'),
-      (141, 3, 9, 61, 37, 'a6503d912dc387e9e17b256ac5cab5e4c1cc83478aa78c5fdc85a7d82a0b671d'),
-      (141, 6, 9, 61, 37, 'd4fbafea5dbb2a94c238cdd21ed6390d931961cabef515b494d26431deb94943'),
-      (142, 0, 9, 62, 38, 'e4292486761589b9bf2e0117b1f3d8d1b37e1aa23232ed1bdbc205ea8a8c8568'),
-      (142, 3, 9, 62, 38, 'b8b45d624d11852c0cecbb65a2dd67d0f983f40a41f3cb6446772b14f83a3fc2'),
-      (142, 6, 9, 62, 38, '8f00a058a9cf87f1d85e38f321500dcdc5e4c703ec24b077ca4eef24521ee5e1'),
-      (143, 0, 9, 63, 39, '3fdc5619e34a0124605d6042d9c090883bdc7d7474d5d498e34eb086be1adabe'),
-      (143, 3, 9, 63, 39, 'c1b310b8511007cfe6ea5a61502522efa2f25f071665c2ee7bca8b84086972f0'),
-      (143, 6, 9, 63, 39, 'a7fe2c0b8c42aea06d2be0f225d2d3bf602e544f7f1d3e6efe8c39b39d881df0'),
-      (144, 0, 9, 16, 40, '854d91b38378ab632657e5d9ca58a9635801152516274233485e2fec8e2b495a'),
-      (144, 3, 9, 16, 40, '5accfaece944999a6e50408cbafe2e5e4f62fce297675746a017a082e37d9789'),
-      (144, 6, 9, 16, 40, 'c46ff1baa17dab3754b5c908f610739f857a0874dfbb3883ef674dfc41dc4e16'),
-      (145, 0, 9, 17, 41, '7a0acb97bfec6101e4d13a4d031659da5a66947770cc1e7db13746c789451223'),
-      (145, 3, 9, 17, 41, '4e0300f2ef8cee202a62eaaf6b8d50dd28c7142ba593604b23d934e48dd23d0d'),
-      (145, 6, 9, 17, 41, 'bf6e8464fad2dd74464eb5a64ee9fdcc0271d8a3466981f00056b58982fa0522'),
-      (146, 0, 9, 18, 42, '8a36a5f5289c255e889f0296aff90b3f64fe446e7efa6d696d25b0a975383221'),
-      (146, 3, 9, 18, 42, '358b7d1e4cb9501bc98ab47eaed37e265767577cf64ac26af37065893395106a'),
-      (146, 6, 9, 18, 42, 'e3f84ddd215b822d08a05431be3466ae8eb647b2e8f2153e677b2957a14111d8'),
-      (147, 0, 9, 19, 43, 'b9a728f739687b4df1b4d469d3e89ac5172ff414a10c8bdbff3f1427a0491d66'),
-      (147, 3, 9, 19, 43, 'eacb57c058886447d2a7f8aa1df0db16467c3dda7c18a948309abdf8848a3b66'),
-      (147, 6, 9, 19, 43, '1bbd76e3093eb414d8248d4db061daa78b17b5d4fba68197c0ce16f8bbe0206a'),
-      (148, 0, 9, 20, 44, '48708ca2c6a9c2c233e22f24d79d532bcc0abf04efb97c1f9584f01a91d60226'),
-      (148, 3, 9, 20, 44, 'd8839ff4c6e092f71e364702f81cdfdf3d5c5d43616932959c1955397456b3dc'),
-      (148, 6, 9, 20, 44, '0e05bcf92896d3749aa7739a2c74fa33d031decaffe34c1bfba8ce5af3808fca'),
-      (149, 0, 9, 21, 45, '666288b8426677f15d17b89a6ed42b804b1abfdbc20a071d19f6b626a6915042'),
-      (149, 3, 9, 21, 45, '69b86ecc24abda6ed93009b7584959c69ad0ba748cb6d60b2ce8c38d0b3067f2'),
-      (149, 6, 9, 21, 45, '41b98855fc6a7aa341585318d7a628cacd698280d73454dbeffc6d3725f2778e'),
-      (150, 0, 9, 22, 46, '023b29cb1272dd8bdbd7ad0c94e810963eae76f52e226620ce0f2cb15ee2af96'),
-      (150, 3, 9, 22, 46, '0d480e526cf4eec01b5be1b3cade05b93b4c89ff1ecd3ad6987cc4ca677ab46c'),
-      (150, 6, 9, 22, 46, '9a3f284aa1f5f3ecd4a6e893f02bfbbb801b5501a209366e8471b8eb164e345a'),
-      (151, 0, 9, 23, 47, '4be12806c32f427297e2e77fce908a4ad6f70a227c7d240186f1e9d4952ca568'),
-      (151, 3, 9, 23, 47, '30021c114d8e2a17a0e43ea68e9c5618567c06850e0c681003c51765d7a58553'),
-      (151, 6, 9, 23, 47, 'a9a42387a24bccd094ba1ca3083b0761b1272bbe45308c0374de11273503c2be'),
-      (152, 0, 9, 24, 48, '99bef1c6008b8956dc283dc7cfaa83261db4fb0641a23392f0a20d52ea88df10'),
-      (152, 3, 9, 24, 48, 'c77c50ac59c65c375adf5d040f1005c91ab81f63effd8487f1ceb802f54ca1cb'),
-      (152, 6, 9, 24, 48, 'a529e8c51871daba2ebcd2ce3520bc431bd50a3bf562ae3ccc6a9113056e8d61'),
-      (153, 0, 9, 25, 49, '8c14193b071d97bf0278fc03cee2f1987c79fbe9c7299d494ea4485cfb7bdba8'),
-      (153, 3, 9, 25, 49, '6df9b269d8a230e653bd3b95db4a56518f40f3c6ab4f95d2312c5cd36765d0e8'),
-      (153, 6, 9, 25, 49, 'f20e43b0bad6857764ec93a6dd7b57802e65e3a5c0ff41e6d70fb0278dbb31a3'),
-      (154, 0, 9, 26, 50, '6708a3a3325f5ba022cfe29ba63521cbd7787503b3fbcaf25d9fdaa26796aae0'),
-      (154, 3, 9, 26, 50, 'e27e203c9a5c44f0989a4c5ef083cb10ac75ffc031d29e3fac6fd892abd0d554'),
-      (154, 6, 9, 26, 50, '1cbb739a11527c981c4848a1ee3c1463a1ad075832ab616bcdec59b285e878fd'),
-      (155, 0, 9, 27, 51, '9bde9940d9a90451932ced1657b2267374e7416a77847ab9ff4acb831853e31f'),
-      (155, 3, 9, 27, 51, 'd421af2b7966ab80f52a4d893495a105f47d20cb4aab4502034a14e3e2747d81'),
-      (155, 6, 9, 27, 51, 'b676ccdfc0ec34b1db5e5b6cfc32767c89fea57ab04d94e1835a9305ef28b47c'),
-      (156, 0, 9, 28, 52, '34f0bc3a0298e59304aa8015061eb79929ac4db607cb04cb4f94d9b40446f3e7'),
-      (156, 3, 9, 28, 52, '90b13ecfcdacdafeb2e769ccc6b01412d5fb5ed36766eee93f1bfddeb767a469'),
-      (156, 6, 9, 28, 52, 'b1c14d89cd9f624e6452a608252d13fb1530ed3248ea841b058f0c0338999b29'),
-      (157, 0, 9, 29, 53, '430aaf82302e710d865221d1d33a683b69844552269a4e4352bfddbe49e103f9'),
-      (157, 3, 9, 29, 53, '6c105b210ed581820ab741a5b45b732978dcd048520a0ee646563a6da23f6f6b'),
-      (157, 6, 9, 29, 53, '7fb5d730339ac3a700913d2aa5a58004f97cdd278e24b9fcdb1fc0972e3df639'),
-      (158, 0, 9, 30, 54, '04a33a142bf870e3326a07077655019c2e7c6bec2e3a6a245ce533e1e7044057'),
-      (158, 3, 9, 30, 54, '1de5c714e22f228e9a2338d732823af9ea25899407702f86f5f1ebe35859eae3'),
-      (158, 6, 9, 30, 54, '5b3ef24ad8c99b18bc64313066b26ea16968ca50b564eb8f0056e9244481cafc'),
-      (159, 0, 9, 31, 55, '87c1d22fac0d7eca27cc21e25f3e6c1af5998b8bfb5f2b876dca34cec08f361e'),
-      (159, 3, 9, 31, 55, 'ce3d4dfc97428b1fb9eae7597c0b646fa8223d9fe65f3cd845fc62a4d8132a23'),
-      (159, 6, 9, 31, 55, 'b5602d51f0a3e00b9577a42520f7662c790d86a5307260e37608793cca78fd05'),
-      (160, 0, 9, 32, 16, 'e0a35bc714cd764998c5547014941b146c21408f571da1202f2350fa1c2dd761'),
-      (160, 3, 9, 32, 16, 'b3f5e1ad3af1f073a184445246e248f8a939466e07b957c9c274d49c5547d966'),
-      (160, 6, 9, 32, 16, '7b24fea10e7e3aa739032673de0586e9473dee52f502288c006dc81336f06888'),
-      (161, 0, 9, 33, 17, '5a777ccee7ca0eaf9c9ac97bda5bd9a9f0e528f45e198e6e4341faec69812fc3'),
-      (161, 3, 9, 33, 17, '04dccfb296569aae6a7026a9a71fd2fd97f1504d19152ae8641d4c51ce8b1be7'),
-      (161, 6, 9, 33, 17, '6972a403cc230425a389105b37c86afe6e0d1ae450974fccbf6f1dc5d69cc5f1'),
-      (162, 0, 9, 34, 18, 'ef63944ea095a0106de03b307b6f8a35bf7b1d92894b74ca8589445a9fed2ca2'),
-      (162, 3, 9, 34, 18, 'd22df0be0d4e0031f055b487b90a55381d46e91771ef88e4c0ff907104d7cfcf'),
-      (162, 6, 9, 34, 18, '883c1be846e76e42b40cd1dcd0c67da8fc08b88b67f7dd13723e608d27a85942'),
-      (163, 0, 9, 35, 19, '4ebefba9b3682d9507014ef62122c6e4a65b7394ced5e5141b7c08c5867a2b7c'),
-      (163, 3, 9, 35, 19, 'e2e1bbd3112e48f87f51ba696672891a5b33f6aad625899824e6329000e90474'),
-      (163, 6, 9, 35, 19, '6db346e7c6bd5d7bd3fa607ed0e1bd4e55eee0016382a7f166edbe2b0c388836'),
-      (164, 0, 9, 36, 20, '791b9509a47bf690b323c6b994818254c513f223a6eebac61204fba4dc1ef99d'),
-      (164, 3, 9, 36, 20, 'b81f1a7eb40656dbc7f5fd98422e58ad287844da99d28ed7ac268bf446c72481'),
-      (164, 6, 9, 36, 20, '69c7cf5dda6408124ad93ea4ab62065e1a4e56b839f7d4599beffcaa7796af04'),
-      (165, 0, 9, 37, 21, 'aed4c8d5d8dda50697b48ca4d60b1a4fedb9b36543d79bdd14605fcf67622b5e'),
-      (165, 3, 9, 37, 21, '5de11c2623840d63e0da14176349ec58951d148dd41ae33ce227ba2d63876ba9'),
-      (165, 6, 9, 37, 21, '41985a2a8b1c739da387274481d07e1b6f2e9bdfbae18cb2a3286263b6811f34'),
-      (166, 0, 9, 38, 22, '3c750cc0af217c543b90cee4e4f5ee97b4a483f50be59c21679a131a1e1c8de6'),
-      (166, 3, 9, 38, 22, '74b7add77748ce6e46e78ff873d83b53c51b60853bec96bdcf7946a1c80e2ce2'),
-      (166, 6, 9, 38, 22, '687f60830079bc7f6e640a1fe29d101942d7db1e9a52cec68a0ac40c53b89f8d'),
-      (167, 0, 9, 39, 23, '19153ce751821b62c8a35ca56bcd8bf49c993bde45218ca4ff14b1cb9de81b23'),
-      (167, 3, 9, 39, 23, 'd7919b318a30200d205d44b09f2447520bdd56210eb545bcd8bd53cf20d08d3d'),
-      (167, 6, 9, 39, 23, '2bebc852a265e0667cb9a95891ac4b0729702883f91abf9aaf166141a6eae0e5'),
-      (168, 0, 9, 40, 24, '522540d1918e63655ddc7c31c0b50e2deae3a2a0f0bad46caa9cf7c4dd9bb401'),
-      (168, 3, 9, 40, 24, '8fc6ebffcd2a8471dcc8b6da71e86facd7b6bd5a23d3a94a84fd89a0d58ae831'),
-      (168, 6, 9, 40, 24, 'e6b7103c3b9faea4bc0668b8e55a7a0034657d1ebd3a03b32207809951f9919b'),
-      (169, 0, 9, 41, 25, 'a8ac162a314b1fd01d0ab17eadd28a754453fa75242c5e465d744796b80160f1'),
-      (169, 3, 9, 41, 25, '6ccc1d5cba939ec970b681e52be3ec84cd2eef3069dcb4d8e72a482394fb983e'),
-      (169, 6, 9, 41, 25, '07765646b12e946d819353baaa561d12d69cd7f6823d805c4ed5eab2f5adc164'),
-      (170, 0, 9, 42, 26, 'd040bf1de52d1cb6f6d1f8a29cafedebc406fc95b445ac531c3b974de0a88788'),
-      (170, 3, 9, 42, 26, 'add81168dd14ad71dd31c37ea77fa533923f0b7f8a5a9b6e9a4e61fb265c2645'),
-      (170, 6, 9, 42, 26, 'dc7f792b624570e247166c83fb47d79e1fec11062df267ec5c71789e938eedc8'),
-      (171, 0, 9, 43, 27, 'e2418355c1de8fdb648543164090ca69657a47181ec0db4a8bef69e894194a98'),
-      (171, 3, 9, 43, 27, '75a27622efd5edf20f1229e7cbe4584549e65ec16bb5d0da0863c5826870ea96'),
-      (171, 6, 9, 43, 27, 'e8a76663393d598440903ec937be71f090c5a11fa3e14ef30f6e48d121e765ca'),
-      (172, 0, 9, 44, 28, 'cff4bf516f9ad7b66a09551f5d0f34e6831e385b9f17ee7f48ee9c055dcd9e5d'),
-      (172, 3, 9, 44, 28, '628d86d609e7701ea9ab945b62ee9bc58ac1d800ba2532f143d92f4ca4b0e9ff'),
-      (172, 6, 9, 44, 28, 'b33bd1ed4596bc9c33c107a5b3c531aa2403de0e3e2c3a4caafc90eff10707c3'),
-      (173, 0, 9, 45, 29, '5605688f135e182aad3ba733521b5d6c6ba27193be83a3a42284b4266d63b704'),
-      (173, 3, 9, 45, 29, 'e3d709d932c6aac677bef17cbf0367c0f77fdd44072d5c4d91601301e4846e47'),
-      (173, 6, 9, 45, 29, 'f6f348d9418867696e85e11035d02470eb54570d55765fc1f3f109a026740567'),
-      (174, 0, 9, 46, 30, '08bd66738d33dba5721ed09f0f75233bd8aa9b77c2d09539cc5ca49075d855c1'),
-      (174, 3, 9, 46, 30, '965a33c5b55db31247859252a0f5be5a676e987c9a7ecddc556a809e3c6f205f'),
-      (174, 6, 9, 46, 30, '58c9bc88f0050bd085ed5b1e2ee3b891816a3735ae3a56365f07b079f77d2d83'),
-      (175, 0, 9, 47, 31, '5ebb0e0ad2d731542a75389e04758f8e5eea5d6485d3e84c835bb5d961118c66'),
-      (175, 3, 9, 47, 31, '50d3c55775ec794da63a89ffd6487371d1275827540323e97a4bf5a5d8cce133'),
-      (175, 6, 9, 47, 31, 'a302f423964e198a9cbf25dcc5bddb4df3aaf13fc586efb2d333fa26bcebbf36'),
-      (176, 0, 9, 48, 32, '66b0078eecbd6b5e7fc8668228fd0cffa9523ad0c8046719375113e859a60795'),
-      (176, 3, 9, 48, 32, 'b855c1c97f01a835d1c864e1fd5c72e5ccaa4ca9c55ed46c00bd3c44b1f1264f'),
-      (176, 6, 9, 48, 32, 'ca72c7bc78d2dd2eaa73cbab85d742e245c25ed73d80c4e5c7a2d7d2cb89287b'),
-      (177, 0, 9, 49, 33, 'ac32082281603e511ab07a0458d5aa7d7a2f770560e9136647e40df6a140852b'),
-      (177, 3, 9, 49, 33, '959d0ac47b91e2b3d12fb0649849ea87e139c882922664c616b9ae0b45072ffc'),
-      (177, 6, 9, 49, 33, '4c8745f598ae6e2af551c49ddc9c5799f762d505a2b7527303b309150ece87a5'),
-      (178, 0, 9, 50, 34, '17e9fa05bc58beee4e5ad48ec9587587c47fe8bd9e7807897454e6bcb555f460'),
-      (178, 3, 9, 50, 34, '267ecc087aa1e9063387f712507ea38c0e2b6979487cda1549cbe6807d4dc5ac'),
-      (178, 6, 9, 50, 34, '43353835be308681d221cf36fab8ab621ebf2ac16ba6d2d163aaaf80320b5dd7'),
-      (179, 0, 9, 51, 35, '307b0e38049a2ec51137149e77704847bdc01e81d1753fc72b6a160994d3b371'),
-      (179, 3, 9, 51, 35, 'f133f12f0f73e0b76d931e6e784d43570d4ec767841cb6c4ed810423a29d1484'),
-      (179, 6, 9, 51, 35, 'a89fb4c595ab26c63245d449bda0eb0ac77d79ae3bd91214ac29c7dc59905716'),
-      (180, 0, 9, 52, 36, '3ecdaafc7b11602f51bb4de491141d5430ac621e41b3a00ddbb4cbafa0da9808'),
-      (180, 3, 9, 52, 36, '40a10e2ba6c3eed83aae12780ecab12ddf7f3aa41186cc8a59b61809cb8290b6'),
-      (180, 6, 9, 52, 36, '2f1da7dfa5975422c8b35170215b50a7e683f60bb1370aa12d172daf6486b559'),
-      (181, 0, 9, 53, 37, 'dcb9052f06506f5c398d6b49385d225956e94df4913338a3422cf05556618d25'),
-      (181, 3, 9, 53, 37, '9a7fe91317f93000af10f020ae3bc033374af4ba2eb0e514c08bd2cc4512cb6f'),
-      (181, 6, 9, 53, 37, 'f751d8b65852b28bf2075de2c4c48f2f459ac28345e09d88e908a2b9230cdd35'),
-      (182, 0, 9, 54, 38, 'ad94272f6eb009d19d66b0cc7e6cefcc2e2c2724b14b4a516c843d4117f5c43d'),
-      (182, 3, 9, 54, 38, '5a3950e5b083d35231657f506cf47fe51d18e4990d95f5808346b83cf07423c3'),
-      (182, 6, 9, 54, 38, '32e88872f4a11cd8378db957e76a372f9a0d40fd88f29ea05312e00acb9e8ad0'),
-      (183, 0, 9, 55, 39, 'f2a5f3ee2763ecdd2814bc00b08d032020b5515c37bce3139b98fcc101e82a9d'),
-      (183, 3, 9, 55, 39, 'd38d4178f28e0eb05df863bacb1a2e9d6242b02a19c747a0768db83eedb88613'),
-      (183, 6, 9, 55, 39, '20a696b6a22e16d861d00f3d1331677a2591eb00fa287ac02c6f0c11d93a60e2'),
-      (184, 0, 9, 56, 40, '8c8aced0b731647c9400bb35bf02cdf81420bbabdfbb31495fbe6f6ebfda79b5'),
-      (184, 3, 9, 56, 40, 'db658a773351228926445ef11f9a6a595a2730409ab618b8c4d6b93e5e9b9cbf'),
-      (184, 6, 9, 56, 40, '4ddf345dd6721c5ca1d1e055f3b619e44059152e3fc15febc3b3336bfe44b47a'),
-      (185, 0, 9, 57, 41, 'f71ec99c8bfaccee75c8993f4935d66d8aa3fda12fd622609483e986ef4b1c54'),
-      (185, 3, 9, 57, 41, 'dc8b8ff63f3b281a39bd6b58cd34b2df1f821a3f511b30f2463b98a2b8295617'),
-      (185, 6, 9, 57, 41, 'c2b777ef570f0392284d044e0ba6ff5c63a4e62319ed115e7664bc09957f9b75'),
-      (186, 0, 9, 58, 42, '6a4f990596843148edde8cd776f36d83bb7b0daa66eeb64d2ddff07db968138a'),
-      (186, 3, 9, 58, 42, '95c087e32829c648e7f0b2c82f6f6f265851bb48503ca7d3ff30a69a8ed72f4c'),
-      (186, 6, 9, 58, 42, '88a5ad0abcea2dc2418ffd5fadc5f4182c5909d9a0b95aa10e0da4db8439a2db'),
-      (187, 0, 9, 59, 43, '33af2c4dbfb0dffa8a3cacfba0259a1a78299faf6420a85bea7cf632b2660d59'),
-      (187, 3, 9, 59, 43, '82c5b98e7a840bd25419f27d4bf90b2009f70a5ba041e4f3b17be4f24846bd83'),
-      (187, 6, 9, 59, 43, 'eeaeccab963a418f5bb45de305aadd2d526c7baae8fcc3e2891010366ca2883b'),
-      (188, 0, 9, 60, 44, 'bc8611c98ab49006cd9a23e6dd5b2749d17fbca39b9b477a7828dedf8d8ecf8b'),
-      (188, 3, 9, 60, 44, 'd8765be2559b9b2af8c2ed006115725bbcd7ed35a82edb2ac0b72cae0a3d78d5'),
-      (188, 6, 9, 60, 44, '4c9c819d9b2be6c0434fd75c6ab6a18c8cbd34d588a890612f71ff9702520cb7'),
-      (189, 0, 9, 61, 45, '61054aabd9255b0b9e27e4b83e1d5840a7b87808595d464018f979c84402c44a'),
-      (189, 3, 9, 61, 45, '471d43e52600250f00715113d1b97e3c307bdd32782367fc1e8026f006864abe'),
-      (189, 6, 9, 61, 45, '2ece890f7de260b754c106b54b6e87cc634cd9c37da24858cf6941db4b429f0e'),
-      (190, 0, 9, 62, 46, 'c7519e480a7d27602bc8a47be1e744a41996da7761219de3beb3694b082fec52'),
-      (190, 3, 9, 62, 46, '373accb0427566340a08ca19b06faca4e91faf96c63e77391011cf01785960e5'),
-      (190, 6, 9, 62, 46, 'd95c0525c28036be6cc19be05066fdaff6f795026922cd6c8764b4add7cae725'),
-      (191, 0, 9, 63, 47, 'd4e8200a4db7d40dcf0c1eebf8c152fa51f4099a2e052d820abf1fc3268b5e99'),
-      (191, 3, 9, 63, 47, '21727486ddaa5e3bcdeaada0c9a7810ca53a8d0cfef494890deb8936cb39a98b'),
-      (191, 6, 9, 63, 47, '0b4ae64c9a88e203ae28672c71256ce071afbddfea54de8a04b7958f5e5a64fd'),
-      (192, 0, 9, 16, 48, 'b21da1aca2129bed84b0ec8a134a3dba9ba8b9589b6cb544ae3d9d4a0389ec4d'),
-      (192, 3, 9, 16, 48, '077687d07b4dc4c8e8db116614ec65e45f5b804e9d8b8c2125f43a6d84cd7578'),
-      (192, 6, 9, 16, 48, 'd5ec8cd2d9a9ca4f817ce2575a5c5ceddb108f8f4deca17448cbe35f3b7bdd6e'),
-      (193, 0, 9, 17, 49, '37a6611d3c442b9db098a22007489cecc37ebe7baa3ca8b9406fff07641203c4'),
-      (193, 3, 9, 17, 49, 'dc1a953491ceffc5bfeba4b250cf335e61f9e5acf7ccec9c698602c495d1502d'),
-      (193, 6, 9, 17, 49, '122fca39f532622a85d8be67ce04a1541935961016ea4dc0b1fe62842461075e'),
-      (194, 0, 9, 18, 50, 'd595933d355772bcbc76c45b679e15331b1f5ed90a9eeb82b92990ad32755048'),
-      (194, 3, 9, 18, 50, '24963d4262d76b41496246efb25c5a7c4b7b2b13977e6b21ed03a457810276a5'),
-      (194, 6, 9, 18, 50, '4571302b6bd8b71e6c95a9ed6ab6c10e82eba9b88d25da6eca71c25da893860d'),
-      (195, 0, 9, 19, 51, '4e636533f79064df91abb12229aef36d9185d62136b6c7a07d0dd31b397a41ca'),
-      (195, 3, 9, 19, 51, '009c6aa586bb3cec1f6f87a60d210883030a6dd8d657d97a3fb3df655de80057'),
-      (195, 6, 9, 19, 51, '33dccc836838f6172592eda9ac151de28822e4ab8219ce25a45da295e19a79fa'),
-      (196, 0, 9, 20, 52, '621408443c9bbb93e7b4eb2fa059639a780def34fbcb888ad5365270beae7c64'),
-      (196, 3, 9, 20, 52, 'b30cb805c1b361b6c11cec409be889fb5fab543cf9c1f5089cf3b30defbc7d7d'),
-      (196, 6, 9, 20, 52, 'f7eefc6d1c9314697a88302c6c34cb3cae948b31aef54711a83b2e341e919408'),
-      (197, 0, 9, 21, 53, '61d895a98916d5ce627142b88f59e75e70cfac8c55f56553d51978c7460514eb'),
-      (197, 3, 9, 21, 53, '8c2548342b033bfc92cec5920c0f056d5cb3eb760d9c9593176c3ea65ed3de7d'),
-      (197, 6, 9, 21, 53, '5137168b2ba622130779c3e43bc9fe796048563720fcbb73ab84c18d3b5681b0'),
-      (198, 0, 9, 22, 54, '3071e8f3433f85d501a9ae93ec0658b3243fea03a46b1f34b311be6d5342da11'),
-      (198, 3, 9, 22, 54, '5083fe8d9f33bc77ecc094fdfa9ac43e074d0aa15fc49aa788e73c7076c393bd'),
-      (198, 6, 9, 22, 54, '6701de08fefdda487bb3ee82d3583acdbfc6cb74614af879e3edaeb3f093de7d'),
-      (199, 0, 9, 23, 55, '0d8c9ed72e345c80a138e07972bd9184f6745926fbd6c0406145866ce1f3d034'),
-      (199, 3, 9, 23, 55, 'cdd7f8ec2475bec5d54931c7f3ec6419ab67cd27f6a0bcf4e1b0c2e1b380cf43'),
-      (199, 6, 9, 23, 55, 'af522f6271683b4a82bee1f522b1f66c93f5a54a99b0e4561a4bd9f89a76f8ff'),
-      (200, 0, 9, 24, 16, 'dd2ae60374932ea8924ec2f0bb4f05938d58b859f9e7994dfdd99a2cb89818c6'),
-      (200, 3, 9, 24, 16, '5f0d21451e73767d53b53db833b0d773ce5b9ad1d12320127e2b3f716ab7e80d'),
-      (200, 6, 9, 24, 16, '7f376e63689b213474d3e5bbddbeb23fef096086fe16eda441bea0d418425d72'),
-      (201, 0, 9, 25, 17, 'e621cc59a48049d835c0d191dd79706998ba7d0330cedf79c9f05ea6c664c663'),
-      (201, 3, 9, 25, 17, 'a12b00dade1534de3af7ac679b8534956443226ac267bba4a5466dda3a72ca22'),
-      (201, 6, 9, 25, 17, 'd95191683df1eea8e2a5773e04ae0a0fe5dc360c4bad52699d348e24d415de65'),
-      (202, 0, 9, 26, 18, '16c4c65dfc1982edbbb9dd4e22db3e5418dc979c396d266f70547cf6433fd4ab'),
-      (202, 3, 9, 26, 18, '61ba96cc68733ba7916c68dbe61df1e4acd3c0682e4609dbb25dd9c30e60ecee'),
-      (202, 6, 9, 26, 18, '14fb5b6f8d3a07d3297dd5d5e785a1bcf8ebfb34c3abb4cbec7c02811a9b3d58'),
-      (203, 0, 9, 27, 19, '8a6a6fce27594cadf91a619bfe15861f272f58b3660094efd585d11871f5ff5d'),
-      (203, 3, 9, 27, 19, '4fa2294d4e9a23b6d773131bea5ef3856c32281f9aef5d0d93bb1afb2f1956fa'),
-      (203, 6, 9, 27, 19, '062299a64181a10f419fa1954dc7a17fc71e5473e6f289753cf9a70abda0263e'),
-      (204, 0, 9, 28, 20, '626169b423c576383e13f62339e2918cec0751bc3cb79cc2cd744c871547664d'),
-      (204, 3, 9, 28, 20, '341db0a065d9509df83ee13b211d94b99f2377cef0403b0a6d472f5a9b3accaf'),
-      (204, 6, 9, 28, 20, '9efdb30496a04f8a86bf9b4583fd4a7463917614bfa3bd2e84c0ac1b277d63ee'),
-      (205, 0, 9, 29, 21, '0fdae589dcea0cd7fcbd5689729b92d9a1313c447c0425d0bc99d44ed412c47f'),
-      (205, 3, 9, 29, 21, '1185fc2df63ff37db9f26f69c68e1b72480cb864ec6ce94d26d9242c433f701e'),
-      (205, 6, 9, 29, 21, '6e4e61995703db009498044f81c460e1c3b107f76f06988408da351363c949ea'),
-      (206, 0, 9, 30, 22, 'ee3f02a6f9c59309388ebfee97e6282976b09596e64d84d132f1106c5ec09c35'),
-      (206, 3, 9, 30, 22, '0451a510b7d38bb2321818fb784bf6992fd5396063fdf85e427a456e240b10c0'),
-      (206, 6, 9, 30, 22, '1a69085b9f9ce3d5da5afc2dfc6ca966c53178b933d813d871b0e2f52ca75429'),
-      (207, 0, 9, 31, 23, 'e80d78aea5531da0c019ec4df0623eca63ab967775920c6d74c6957bb022d665'),
-      (207, 3, 9, 31, 23, '8e5a21a86c737bc8611cd693b704dc1fe0c59ee09dd97f3a663e9b0dd25de3b2'),
-      (207, 6, 9, 31, 23, '9a20c3ed5964c21c954c216d4b0a5a0a93da6dd69a2b2b54116c7fbdcedf5f70'),
-      (208, 0, 9, 32, 24, '4b80a9c0ceee833912b21d4521cc39f87e8144c96820a8fb3e4292aaef493d4f'),
-      (208, 3, 9, 32, 24, '3f06046ea8814b41b78146604572b3d2922adf2e593e640b2b97de57731d8e9a'),
-      (208, 6, 9, 32, 24, 'de2a7585d90de23253bfe5d05487195414fbc983745ce6e17da79437d6747860'),
-      (209, 0, 9, 33, 25, '3c5d031fd21f877123a6df8b6376833ca121582b92fd72e87a9481e022cbad12'),
-      (209, 3, 9, 33, 25, 'e85f4c93d087c209071932847fe835cd9e241776bba1dfb5a3bb7d67512ea4b7'),
-      (209, 6, 9, 33, 25, '4edca250ffe50c29d42f3a7e6dfb9df07d6a7a094ccec7017c8b05ce7cfd13b4'),
-      (210, 0, 9, 34, 26, '85124242095bb59169c700737247fb8171c8bfe27eb164b887fc3e92ab394c37'),
-      (210, 3, 9, 34, 26, '7acf5f8c6c04f4b7c1b301b59ffa48859a7e12487c2e33d3dc27b0756aabff66'),
-      (210, 6, 9, 34, 26, 'ecd9fd9824f63e056dfcfd1883ce823f87780bf5999dbe0720a2b918798e7fd1'),
-      (211, 0, 9, 35, 27, '552a613adad24ac973cd2504dd66cf7e9f0b26ae70eefdf865ba1175a12c6c8d'),
-      (211, 3, 9, 35, 27, 'c59a6f883797b584f37f3519d8cd7691dccca9eb0fe9e0ec9d2624315d9d66f6'),
-      (211, 6, 9, 35, 27, 'c7d28745c8e903ffb36c31ad3f2bbb88e147e4ddc8837df1f255df9d715c1d0c'),
-      (212, 0, 9, 36, 28, '5462828950e74d275bc9671ea8f7ed024468b7f498482a89afb2fae804fa3f99'),
-      (212, 3, 9, 36, 28, '19688b23ccdd250bc3f0d37d816d1f1891bd56b4b2a9c34d75810f664ae5fa66'),
-      (212, 6, 9, 36, 28, 'cca658cdb04b87855ee09857cc4169fd42e2ee6d902df4785873a4224d21cc7e'),
-      (213, 0, 9, 37, 29, '1e14408c7aa9c74a31801aea7c756a628c0a9f1a2bc545acbd952b10b6649692'),
-      (213, 3, 9, 37, 29, '1efebe8ef8ecee8c99cb7fc61d961fdbadbdebd33872d4083cb9f855bee64425'),
-      (213, 6, 9, 37, 29, '52197e8ae9ea8770a8008348266bd331b3d71bc7aadac8984d424a20a2da61d3'),
-      (214, 0, 9, 38, 30, '0f68c88ba384c722e4e442e7dcf600efbf669439ea5dcd93e62f3965b427f77d'),
-      (214, 3, 9, 38, 30, 'ca8069856120fd53ab93928060b945524e6a2a5380b511ceefa897a6f33ba162'),
-      (214, 6, 9, 38, 30, '798b9e87acacb59ea8fac99da9e3101e97ed9ffffb058a9ce8102c69765fd374'),
-      (215, 0, 9, 39, 31, 'e220d17fa2eab6206d38d02af5f2667b4d8a2560cc8ce973f18b2c8b3fc6595d'),
-      (215, 3, 9, 39, 31, 'aca121d8d3d360d0df00fe6f566766272cf00dbf3cd397e94dc58f58901ae0c0'),
-      (215, 6, 9, 39, 31, '5bd7551316acc9aeaf8ff2936cebfdf55f9c1c3ea1723a069a545d55449296eb'),
-      (216, 0, 9, 40, 32, '58b3806c7133d5626ebb9fbc6797002adcf7dcd4cea3d8fefc2ff8e70aaf9a46'),
-      (216, 3, 9, 40, 32, '43de8ca267748e64fd88511ae0239677af6408a42da245f710c7722cf2d51137'),
-      (216, 6, 9, 40, 32, '8b9b84420cc21af1a29c8efe4c70618b27dacdbec017931ff9b2c74990d1c6a1'),
-      (217, 0, 9, 41, 33, 'f41b5fda2e38e769808004fb7d35cd79dd0e904b5f9daad84afbed617ed25592'),
-      (217, 3, 9, 41, 33, '912be506f5c47b99a2275d04ac7c2702b9cc13db0acf1bb4a992312ac405160d'),
-      (217, 6, 9, 41, 33, '591e676784fc3f45e00600f7214c82da9d815bd10bc276aeb4b1785ec8b175d2'),
-      (218, 0, 9, 42, 34, '94e722b59f5a59f159d1a9f9f13be9ce8e4d2aa88ab01363443f8b197baae1ca'),
-      (218, 3, 9, 42, 34, 'ada5104fe470f805dd4cbd274fe14c4125c4417f1608e530fd792d6efb93a5b3'),
-      (218, 6, 9, 42, 34, '2d15ef93d716360a174860693ffc1c571687e21ff224013eeeabbe43929e970a'),
-      (219, 0, 9, 43, 35, '7df74d6bf2913999b1b2a62f7cbab368648921dd9fee750c3a2ff281f88a737d'),
-      (219, 3, 9, 43, 35, 'c360dcabcf27c605aef06a2bf72cab243d8b34ff49b7642f5435d688a714bd54'),
-      (219, 6, 9, 43, 35, 'caac45c6a0f38b8e9feee5c46746b6fb6be11ec38a812526d4e20476c2601e70'),
-      (220, 0, 9, 44, 36, 'cf6da6dadd9610dd8191a042525f891d2b9599412910be27718770d7d158d675'),
-      (220, 3, 9, 44, 36, '770dd214e58abc2dfdcd419d8435553503e32c955073500fccc45b3d7d40568e'),
-      (220, 6, 9, 44, 36, '2ffa3d8a07bc6bbb3a69c7ceb53074f369ff092592eacfe81b08b14ae2de874e'),
-      (221, 0, 9, 45, 37, '384cb527946795d42cccaadae3dbd3cd8525962230245d946272ba2340a03a06'),
-      (221, 3, 9, 45, 37, '2774c5c3cf070bbe6239704b3c90773ffae86479398cd27544a8181f447b9e1b'),
-      (221, 6, 9, 45, 37, '95d997b3351558cc193d18c927bc6a467ea7d2832c86acceb3809218a99a0609'),
-      (222, 0, 9, 46, 38, '9c7dec88e7f5c4746280fa1a1a379bc125fb7cea3092027573c225ecf9c7a9b1'),
-      (222, 3, 9, 46, 38, '047a30acea1a8db63208a04f57e7194fe1fe5170448f9dbff8e0e1405e1a6fe0'),
-      (222, 6, 9, 46, 38, '29750ce1ec51189d8bf521f696ee6d9668e02a1ad6f58f0fbcf3ef07f61654ed'),
-      (223, 0, 9, 47, 39, '3b15ef06ed77133748ddc5adc0839a9b0349387b04472f8581bbbdd5df64fde3'),
-      (223, 3, 9, 47, 39, 'f46b32c863e17513ed59e0a9bd46fae42b13866e1da1c819598e827f3ec952be'),
-      (223, 6, 9, 47, 39, 'ac41f4fd421de9fd7454c338f4cd607cc33a398986fa0edf1a860fd91183a85b'),
-      (224, 0, 9, 48, 40, 'c6b0f63595d4420ab74a0f57c107025e6c228277045146e681b26a6306f5a62c'),
-      (224, 3, 9, 48, 40, 'd8d6ceced767f38c51d71489967757a346097d7558fcbf1943bcae9bcf0ca4b8'),
-      (224, 6, 9, 48, 40, '8beb88385bd1ee0a0f2606304c3035661a63e2864c6528540b28176770ed5356'),
-      (225, 0, 9, 49, 41, '5c8dc49bbb8fc7b263c79a23e7ff725c0abaf138aff748792bd76403422bcd48'),
-      (225, 3, 9, 49, 41, '9026ea4a9f0c2b05420f936be07184478a03ef4fed39e6602727aac57a5beac7'),
-      (225, 6, 9, 49, 41, '372df08777358c6c863e0e543065d7c85b0e96683b4aa93f880c70da34e4ec1c'),
-      (226, 0, 9, 50, 42, '6b834f04cc5fbc0361c75261c63e00f81fae41275e1dc9c46f0394b25cf4c10b'),
-      (226, 3, 9, 50, 42, 'ad58328e596e6bb3546d48c917b0978ea99d2957f114bed9367c95bfe246ed81'),
-      (226, 6, 9, 50, 42, '115102301828fa7e25bbf2e92a56c308e22e2c41bcb674e65809ea9a832e0eeb'),
-      (227, 0, 9, 51, 43, '564bfbaa5c00876c064c0b31b9ccec1d8082c65cef2cfa20d1d8dee57cf1b205'),
-      (227, 3, 9, 51, 43, 'd7e1d342c60985e7edba445f4937280f5d5c5310c3db042ec644ce554b8a0d32'),
-      (227, 6, 9, 51, 43, '3e00a60e13311b6f403c79f04dc9294dff6c0652cb125bca5930eb95beffae95'),
-      (228, 0, 9, 52, 44, '9d6a3b67a87354064a75cb916b1ef04a5996f8ec0c69810f1c2ac42caa7d9db9'),
-      (228, 3, 9, 52, 44, '2751f0ce6f2261957cde6ffa18247ead464011b6c497bcd0e74a73b59ee13492'),
-      (228, 6, 9, 52, 44, '2616581d8eb9c724e8b9f8160e4d7b8179a452e0339d226aa43f34ae1c2b8760'),
-      (229, 0, 9, 53, 45, '6d5f73e86cf42990296d8afc083dc7b06dc6c34b36341410901c2479c61fb6ed'),
-      (229, 3, 9, 53, 45, 'a16842a2f0d3cc06771d0f80dc78da40b73d8b396ecc7d3f208999b5c99fdeba'),
-      (229, 6, 9, 53, 45, '27362542baa014308ec8d1b92e8a473cd68308933c39fab8edab587a5fe6df47'),
-      (230, 0, 9, 54, 46, '000649c18eb0dbbeb65bfc75859734937592c0cafa70ae93773487d4b41d0f6e'),
-      (230, 3, 9, 54, 46, '8fe265d76af9b9873fb18ac9c93d6bbe0983e1827b82d7fea782fce26ea59829'),
-      (230, 6, 9, 54, 46, '9c135f3270a390f0cb78ecebbb504cb1a4c11d9d3bdcc024280023ddb574cdcb'),
-      (231, 0, 9, 55, 47, '48bf9e055aa1838f2125b557fbcd8ae06f6beda7ef1ff1a57b3a74705ec87ffe'),
-      (231, 3, 9, 55, 47, '47a909d9cb69dff56e45cc72818149719881ff98a134a1e9d25d31e7afd83342'),
-      (231, 6, 9, 55, 47, '435092954e82cc9317dd02722d5d7b6602bd7848fd72364099a845b8fcf9d7cf'),
-      (232, 0, 9, 56, 48, '9ca7678e5dd78e555c1da2b3e42f3933e7650a412f378e47a84560c5ddeb5183'),
-      (232, 3, 9, 56, 48, '2d840dbe32d6b6c4a088ef8fb9dbc01907dfc34368383a3f9a6100474fb1e744'),
-      (232, 6, 9, 56, 48, '2499a30ae6d7d85f01d6793e11f5eadbd28058d2104a2e40b4231034863db45d'),
-      (233, 0, 9, 57, 49, '4afa6e943bf8b5a3f8ea5622000cc4f6c41564bf3a940dc0e5309fda0b44957b'),
-      (233, 3, 9, 57, 49, '2b9817fdd216efee5cda37cbc1ba197fba868725fb902ddd5dcd7ded7739bc7f'),
-      (233, 6, 9, 57, 49, 'dfe47642dd6160d7eed10498d5b1791be90947419e86a1e0f57552c575ce53ef'),
-      (234, 0, 9, 58, 50, 'bda264baa7126ad97cff34cfa2d6e1bdadc293c9b92113ee5d89378e2bc30533'),
-      (234, 3, 9, 58, 50, '3fb1a678a71eae2f46786a20bf4f991e15e295a458cee236806cd74bfb2b5969'),
-      (234, 6, 9, 58, 50, '590f8a222e555a8fdb8122992b06d4523c2fd7b13ef8320d02c2a7491b710081'),
-      (235, 0, 9, 59, 51, 'ff3849a090d5c46f90603f23295a43184e0d3fa5e57c397a4e2f79cf965c10ed'),
-      (235, 3, 9, 59, 51, '408b8337a05b27c80a7669636a55be5f03be46ab37d3afaf96f9e1e6f1be2799'),
-      (235, 6, 9, 59, 51, '5257144d7e3c51927b4d4294842d2464cc84fd3add87eeca3fa4433ad3aea65a'),
-      (236, 0, 9, 60, 52, 'dd06e20d2943d3e3b6d66f610f3920dad9f3c991bcab3378f9b831b5130a9b88'),
-      (236, 3, 9, 60, 52, '7b40287fdfeede9c714617830b9669a367b1d1dc4aaedcdd9b093d6f0485ddfd'),
-      (236, 6, 9, 60, 52, '99272dd3f81970d37bcf513798b185e8814bf7aaa85d424e141763c0d56b9308'),
-      (237, 0, 9, 61, 53, '5391a84161c686442b855de69fbfad4e3fa6d73c35c7ef6643d341326bb2fab7'),
-      (237, 3, 9, 61, 53, 'cc7b054b32594152e84678c3888af62977e5069b371fa32e70a744f268cbbb0a'),
-      (237, 6, 9, 61, 53, 'f841c03bf5f4bde1a1ea1eb8590296cc0f351d50429a9b53ece3846f572d4028'),
-      (238, 0, 9, 62, 54, '6b9daf4919308f779c4bc609711d2c16497ef3df03e097a07bcc76e66cf79710'),
-      (238, 3, 9, 62, 54, '3ecd6be68fcf2c8dc46c2f37816e9dccde8e3bcf02b0ad33b09087dc965ce5c8'),
-      (238, 6, 9, 62, 54, '5fa37f9dd8420d484b6ffab0b92a44d2dd09a5c31777825a81a3aa7c0bc75567'),
-      (239, 0, 9, 63, 55, 'f90316a1360afe18f1f9eb35a8da6e8009f734170088514d9e526c20e2ba1ea4'),
-      (239, 3, 9, 63, 55, '61e51e3e80f16da1e5c724137aa52a7b983c721dd1d9f4fb502aadf956b1d338'),
-      (239, 6, 9, 63, 55, '54dd1a09088fa043c42f23d8a71af4b984e6e3f6c73a1250a36c52113303096f'),
-      (240, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (240, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (240, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (241, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (241, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (241, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (242, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (242, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (242, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (243, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (243, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (243, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (244, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (244, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (244, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (245, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (245, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (245, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (246, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (246, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (246, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (247, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (247, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (247, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (248, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (248, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (248, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (249, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (249, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (249, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (250, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (250, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (250, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (251, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (251, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (251, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (252, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (252, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (252, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (253, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (253, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (253, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (254, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (254, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (254, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (255, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (255, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (255, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (256, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (256, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (256, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (257, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (257, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (257, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (258, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (258, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (258, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (259, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (259, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (259, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-      (260, 0, 9, 36, 36, '8e2267d9d5b3887b3155ac1c3ea2f23f34ef2072b48e7ea2a0e2d826699767e1'),
-      (260, 3, 9, 36, 36, '432f1b390e55ce9e52fde23ef3fac4deb7394d7746e84bb34b7a7fb14b40ae80'),
-      (260, 6, 9, 36, 36, '39b419cf935494540e712c2622589962f429f793305e8f1e9b6cc92a28b89701'),
-      (261, 0, 9, 37, 37, 'bef64838d49ccada5c0b459946c321cd91b0d897895270bab0e69bfe0a1c4186'),
-      (261, 3, 9, 37, 37, '241c1b8b05fbfa04d04ca702ef9491ba58d0f3b4dff52734abe5ef94cd9b9636'),
-      (261, 6, 9, 37, 37, '09fba7228703b4160dd29da3ce6a4715ff93a9c0003b670d550cb73baf034701'),
-      (262, 0, 9, 38, 38, '932db3e008ec4488ce17287f81170a7862796c650dc271cae7b0f70261dfa27d'),
-      (262, 3, 9, 38, 38, '33740f21df6eac2624d9e188ca5356ef20cee44befb496fbbb2ff0a3fe28e0aa'),
-      (262, 6, 9, 38, 38, 'cf86939424e249d6d07439c7fb5c996d689ae057b644d93c8b51dc59058774ff'),
-      (263, 0, 9, 39, 39, 'c2ce2172256dcee2e4c13d86684c37b9d633ea43599b80ee81d4a6019ffd5e80'),
-      (263, 3, 9, 39, 39, 'cba1c95fc94d5f06eb313e51bcdc6b9ab1548bf551d41b2480332795de8d2adb'),
-      (263, 6, 9, 39, 39, '7985683d280f5b4a6bb910f562537a093498bc76a447c0370dabcc5d8e3dfa3c'),
-      (264, 0, 9, 40, 40, 'ff657e41afc635ff08e0a4abab525368043258df941e1d2ed25b482b096e7824'),
-      (264, 3, 9, 40, 40, '761c108367f657b8089192b9a22176fd36d287c590d6a8b437880243809e0d90'),
-      (264, 6, 9, 40, 40, '7bd196b5358ead0a4538348c04a26344c35fadc8c083a6f86ac6d6c0a4ab8c3e'),
-      (265, 0, 9, 41, 41, 'a24bb88ed1a55a5eb96dabaa64525de563901413639d240e6151c9eedbcf231e'),
-      (265, 3, 9, 41, 41, 'c588f878a531db49cf9ea0e87876003a55452529365538955d3ab42782be47b2'),
-      (265, 6, 9, 41, 41, '1a821f7233989043862206aa25bd30504a8dde18a20032e24493a657eb2ae036'),
-      (266, 0, 9, 42, 42, 'd02923e877543df074b5efdf26a5b8065101abd185d5916d59c6a67e54a7177b'),
-      (266, 3, 9, 42, 42, '84a50ba70c76060f329e1b22071ddecc8803f7ab083bd899c5c96218ab0c93f2'),
-      (266, 6, 9, 42, 42, '1a6b741e8e1846f896fee954e422b48c30639cb0c050e50337b8e646f457e8b3'),
-      (267, 0, 9, 43, 43, '2c701d56941329b13669a9d35fcf15aca518194cf8c9bf23be10ea1fac68da93'),
-      (267, 3, 9, 43, 43, 'd1dde2f7cb06e0b1eac1c0a0fd44edbf50ab53cf2bdd94e97aede3c0e7ae5ca2'),
-      (267, 6, 9, 43, 43, '194bb921b71faf4154cc3145afc1652ee1f5cbb5271b59bf36a44c18954bd51e'),
-      (268, 0, 9, 44, 44, '157387272447ffa6bd4dffe247f0a8ed6cced1afefbe294e9759207dfa928edd'),
-      (268, 3, 9, 44, 44, '6032306c5855632d26d21d5e523146db323d322d52ad96ad13b815529cd55906'),
-      (268, 6, 9, 44, 44, '1e58ef598b916f1092d2a576204324d9628736711610d4d8b28faa69a398565b'),
-      (269, 0, 9, 45, 45, '8ef00e70eec04188432ee3cdf06aaf5f8a70b67d746d723e779e37cf255e7e57'),
-      (269, 3, 9, 45, 45, '47beb753ca5d22996f2613d216851657dbd32346eb8b8ecfde77ba2a3e475305'),
-      (269, 6, 9, 45, 45, '03721557b78b5fa383d9c81488ab24b7d033bd1b53537ff6ae9de9a487ee23e0'),
-      (270, 0, 9, 46, 46, '1a503cf36668310c171d3b1908e16af2c79525648d470c3247d49286fa13c474'),
-      (270, 3, 9, 46, 46, 'bf86ce3aaba71a7d0e823339d11d52e5db6adfa69c00c5896eafe9a5cd73efdc'),
-      (270, 6, 9, 46, 46, 'a38f000d6474d7208c6a5c0ac176a4b9173c9b8759a42f748ad1dbaafc48ddf2'),
-      (271, 0, 9, 47, 47, 'e01c89ddf285a808cc59dd30341979021e680880c09128e56646893853f8c8a4'),
-      (271, 3, 9, 47, 47, '08f7f319765523f1f252f09c4922d7b5f4ab489430167fa3a1670511fa1c12f5'),
-      (271, 6, 9, 47, 47, 'acf788970d3826a2e336da1830c3cb3f47bb8bac47549f9b3117cf2fac70496b'),
-      (272, 0, 9, 48, 48, 'd93da555eaaa95d22d99ac77e1940624cfb87dccbd77c719d4068ff71c6a9782'),
-      (272, 3, 9, 48, 48, '957078a4fe289fe09f3fa9e029d1f3b8e0208bd91719f02efd9309b7d0cbc416'),
-      (272, 6, 9, 48, 48, '03384c23f91a22d72bd94aaf4248f2403f50ba91d87e947ed3666567f488b81e'),
-      (273, 0, 9, 49, 49, '539a2fccef6a006d4f517540d56793e9be1341e8dd53341ed41913342e849d1a'),
-      (273, 3, 9, 49, 49, 'a82f9b8d65fec085550f13f943c37066e8b72acd26315964a86c58bebe5a5857'),
-      (273, 6, 9, 49, 49, 'cb96c5e3e5b63b442382f3c877dc48348a7bec99a68335dffc065ca75007cfd7'),
-      (274, 0, 9, 50, 50, '34d6781cf6e48453714e57f44273cea8073587187cbfa582df2772fd4b05b0ab'),
-      (274, 3, 9, 50, 50, '463b64415db029d7e867b9737f8f9dd1dc652abe7c304ac64d5729246c476873'),
-      (274, 6, 9, 50, 50, '12a31686a0dfe8c4eb3e3c63c791513289192576981c081066ac8bdcbe711d37'),
-      (275, 0, 9, 51, 51, 'af5d49e6e42328128857a3cb3b064c14ffaf680b2ddc27243719988f6cf970e2'),
-      (275, 3, 9, 51, 51, 'e2dd68fb3381d341bee0fa68583b558387027067ef9f83bb8cbc6d0dcb01ff7a'),
-      (275, 6, 9, 51, 51, 'd1aa44c84feea301ddfcaaaca1f6b381870bf6b6fadef66b3eb6bb1eb3e8a540'),
-      (276, 0, 9, 52, 52, '1eb2e7bc51fd9dfb1ea02c1675f784efa7087855c1f791fd4bd92d99aa2f99a5'),
-      (276, 3, 9, 52, 52, '23026a91ce87e0f535091463b23cd61ce28ff13ebf0c0bbdfdf77cd30c2870d9'),
-      (276, 6, 9, 52, 52, '5a8d6e7eb10c094ec82bc6b1e7ccf4b35f0443a6c2cd39bbe79103869999505f'),
-      (277, 0, 9, 53, 53, 'a7db595a870b83d019aefa8bf1f01f20337b958339196e91e7c2c75ae51f65ec'),
-      (277, 3, 9, 53, 53, 'bc08b1743c518314df8c9fda918f9ea908fe9afb45910dcc51222a1ccffd6e66'),
-      (277, 6, 9, 53, 53, '1056d0defff8c1ad62c6444c15a6887fc7fd388c807a8e2b1870ad7542c68b09'),
-      (278, 0, 9, 54, 54, '2afa136a26802e24f52b6f99fc0d9636ffd4e07a2c360def977954cdfeaae085'),
-      (278, 3, 9, 54, 54, '24a1f9c8c571c1d034b5a5e0925ccefdcc0bf291b51da8179e8dbd55767b0750'),
-      (278, 6, 9, 54, 54, 'bd0a89ed8e89b12f8a6d0715b2680cd54f41bbe63af38f6974df40bfe7a1546e'),
-      (279, 0, 9, 55, 55, 'c089c997ea965416b0fda611986b9032fc64d0078e2e7a63ab02070ed4d4e06e'),
-      (279, 3, 9, 55, 55, '232dbf89d0e92fec24a30c84cedf3313b8e8c451f22104c11a1c4377e571771c'),
-      (279, 6, 9, 55, 55, '2628bccfc229f0b8b998c5b4a0321f83c6f62d31785d21bddf4256f7e851c7ea'),
-      (280, 0, 9, 56, 16, 'b376679df70fc00756fc58803d1182a2433e3d48dca46271be119e682a843661'),
-      (280, 3, 9, 56, 16, '4d543005d7875e425292ab3a03a1cbd3716628ce1219913a423f6950673685d0'),
-      (280, 6, 9, 56, 16, 'b0c6e0033f1f2eb09f7017c7bef99d3905094878d51af055bd72a05e91f84771'),
-      (281, 0, 9, 57, 17, '8dbdb21b6a2067abed2697673eb4048d44ec0ac7eaf1e7972265e7718c2461c7'),
-      (281, 3, 9, 57, 17, '9dadbce8af6f63dc28c75eb5e8f70b0973a891a715b3e3ca9265cee2ec1119ec'),
-      (281, 6, 9, 57, 17, '5c37df3c677e90e8e4b8ad760e7a9d7122e49e5f8403b2b369e2c331a15bedfb'),
-      (282, 0, 9, 58, 18, '2088f95afb21412ce9b2c985617aaaea649044d5562ac6752df8770d3c76134d'),
-      (282, 3, 9, 58, 18, 'd110b9607622a23592b492b42e0ccebd9328b25914e4f61480a088dfd8473d7a'),
-      (282, 6, 9, 58, 18, '331ee14ea9e707bc7de301bcfa7368e21fe45aaaae3ace7c7532086dac16f80a'),
-      (283, 0, 9, 59, 19, 'e84e34dc4b0f15c87307052d7aa48d70a851cfa796e8801cbc2c4d576cad97e9'),
-      (283, 3, 9, 59, 19, 'dbc3a5cb51ab019ba1ec9dd841bc5584c5ffdbf99373f187e0386694680dff96'),
-      (283, 6, 9, 59, 19, 'aa1a6c4ee7805d4fb8bfb8723e715a1679c26189043dc0de91a3432b97274e0c'),
-      (284, 0, 9, 60, 20, 'aa3cda610485f81e633e41b84f8b108da189337596527d7e82b65144132e311c'),
-      (284, 3, 9, 60, 20, '0b249ef8a0a61392989855f01aada4462728d4cdc34147165767a1a2b66d4d38'),
-      (284, 6, 9, 60, 20, 'f023a645b65fc073fddad85eb2a7fdb011b49acb4e00f69c1d4a7cace4b6e809'),
-      (285, 0, 9, 61, 21, 'faccdb6c764dd6e266bd72bacb2fb3443f8b79dbc220513d13c914da52d79cfc'),
-      (285, 3, 9, 61, 21, 'b7e9bb82ffbdba377a7d80d6d50c2b245134028581e8788ff73cf6673398c903'),
-      (285, 6, 9, 61, 21, '535d009cf1eb24cd490dc0b9372b61653ced07f533cb4d0aacb0badf6a182ec7'),
-      (286, 0, 9, 62, 22, '6fe1806e79856aad39ff3a3ec3da326f3ed3f76013d34d7078763f44d62593f5'),
-      (286, 3, 9, 62, 22, '61fce86c9ee6f09b00a6970e9ce448658aa4efc70d9dc52b69e214fb11803983'),
-      (286, 6, 9, 62, 22, '9154d0d1abe116a73cf1ce17f90261f32a4ee82b47f1bfa0968c394b8de314cf'),
-      (287, 0, 9, 63, 23, '7af875c080872235b2f205194d12085ea60120beae0c46e90a78aabb2611da97'),
-      (287, 3, 9, 63, 23, 'c8dc468cb50f3c5c32299b5ecf5ac7857b3e80b712dc5545a1b896681be505e0'),
-      (287, 6, 9, 63, 23, '0b883d0b25e89f03d7a899473a8a663fe54fccd66ff0220c2f88c8328fead8e6'),
-      (288, 0, 9, 16, 24, 'fa7613f84cde3ebc469a327e00ae772a647f3e6c0237e368e1d7e42cb3f67c3a'),
-      (288, 3, 9, 16, 24, 'bdbc57a5a5ec359cf039e38c83adfed0f84dd6b0dc365d29b24d8458b88ecf4c'),
-      (288, 6, 9, 16, 24, '551dd18d551dac9be38b64395d45c5f7c7b3d1f1845097623fbaaa32c6a25f17'),
-      (289, 0, 9, 17, 25, '5abdd05bcd748098c718c61b74ffca55333bc9eee7b0b2c86a3e3ca05a29942c'),
-      (289, 3, 9, 17, 25, '0a515ea12cc55129593e6b7c30ccc3007373568db556c065e7f4987e94ea4876'),
-      (289, 6, 9, 17, 25, '435bd382ddc22bdc3ba6761c69bb52dd92939dbe748e41947228cdaf5e805b53'),
-      (290, 0, 9, 18, 26, '96119b1e8840431f42dd80a1d129f9a79ed0bfde6665f41103b569c15915d38a'),
-      (290, 3, 9, 18, 26, '1ec0b9fec820dd6fbd77d825f9071bc8a1a793f2c714a7b539f8dd3e2aaab462'),
-      (290, 6, 9, 18, 26, 'b0ae413da840ed115d4339db976ce9234b1c570a074d56ffb2a3a2cf2f036fa0'),
-      (291, 0, 9, 19, 27, '6adf155578c74ab47ebb50eaa9011dc017a6137c27ef5f987072d9c3012b9994'),
-      (291, 3, 9, 19, 27, '910e3f298620d5a8ded66f57032b78f4dd0a202b63578f44a72a9d2d67bf6190'),
-      (291, 6, 9, 19, 27, '3db85052a1f54481fea8cbacd6713b18702ebed1d20e96b22581133e49361b20'),
-      (292, 0, 9, 20, 28, '158218014d9bc35b565f0beeb974d059a49c86d31dd24d913d68ad4068fabe7c'),
-      (292, 3, 9, 20, 28, '08473f986441151a57de1e006b02b414d740a3d3ccc4a27999473f11491a3df1'),
-      (292, 6, 9, 20, 28, '10feec623acf88e22a0a8af7ccc1e7d21438c8f2f710c9871da12055a9ec65e2'),
-      (293, 0, 9, 21, 29, '7285a406223a2da3dc6452830c784aaf381c2bef887f1196044cbfb06e0f732a'),
-      (293, 3, 9, 21, 29, '3c3069bfea3f89c3b74150b0de54390cd514378eedefa8b07833671224df9256'),
-      (293, 6, 9, 21, 29, 'fa71f023cdffb2acd89235125df9a67c0914a96a71b44aa465eb6fc910451f59'),
-      (294, 0, 9, 22, 30, '5b394734dc67f65463477f9b02eebe1671a68ec7b2e55f544156c8e46507ae3a'),
-      (294, 3, 9, 22, 30, '519e294008074f9ad42dc74bff6ab7d6588b6fe46c2c8fd3a34e203a63b2a4d1'),
-      (294, 6, 9, 22, 30, '16f4ba5e3fd30dd411293cb1c15b6e2e186e635d8f9500296a894690bf879934'),
-      (295, 0, 9, 23, 31, '1228f32113a078f587e18326bc8b8409ab1abc73562c13931d0d3767ba77145b'),
-      (295, 3, 9, 23, 31, '3bc7bfd72caba3ce4b90d8d8c22b115871cc4c8316e40d111f88bf9531c48007'),
-      (295, 6, 9, 23, 31, '9b46b7204bbd0c878e892518cdee8fc9c4055b98219dd2fe9147f68068f66034'),
-      (296, 0, 9, 24, 32, '0bed753309d414baf564eda241fa1627575927c7efe92552f3fb9956a4297649'),
-      (296, 3, 9, 24, 32, 'e6ec2966f5cf0fcfe201f5762dbdcf2c4ec3e3dc2ca2e70d7665e295e069c1b6'),
-      (296, 6, 9, 24, 32, '04be33115728d25d8b89ae08c6073a6043c14e79a83b9596b08efad545f71f31'),
-      (297, 0, 9, 25, 33, '9fa91f3fce7341843e48ceace516bd08da710e7cf5074fcfe51f12377db13438'),
-      (297, 3, 9, 25, 33, 'd9b271d5a067594a6dfc1170e1a60c9aa5bd473e2982333b7bc26980724bc377'),
-      (297, 6, 9, 25, 33, 'eac2961ea609f2e6eafe50368faeb46d2da765fc609edfba69278b2c03f59bec'),
-      (298, 0, 9, 26, 34, '5e96039dcfc56f38422a36c03cfb810642de6df810825ec6e358e88ab0e8cd2b'),
-      (298, 3, 9, 26, 34, 'd35bcbee9d2fc86f3f2e290e0bf5d6deeaef42f9adf25713239cc5c4ea4bf394'),
-      (298, 6, 9, 26, 34, '1bab0d37e7f0098941e372ef4a45d413e7cfa8cc01760cd3c38ad7a57edda867'),
-      (299, 0, 9, 27, 35, 'ca9800db715e24bad76ffcfa973242dd0b9eb7d73b51f1faceb69c412a0c5e4f'),
-      (299, 3, 9, 27, 35, '9ff75062bbca0570cb8e72ac45332ab80e71ede5d964b67a784ef73e9c90b392'),
-      (299, 6, 9, 27, 35, '8265c450c7daff3c1e9778d11a048190222975ccb6129a0783feec0f2fa54174'),
-      (300, 0, 9, 28, 36, 'a721509c60a5a76bbbc11ceb92823f21b2b9f5fd000d18c602f715221b903ef9'),
-      (300, 3, 9, 28, 36, 'dcbd9ca2e1781415b9ec5788e690863dea5612664beaff3389e5e1d892f4890f'),
-      (300, 6, 9, 28, 36, '3fb5156ccd5583ad79c81cdab97382c2c899e4ae2039083f67c302e5315aac24'),
-      (301, 0, 9, 29, 37, '9a2a7d7b54434c1d86c9efde7c86fbcc29a4e3d0d19d1cdb3c836347871022cc'),
-      (301, 3, 9, 29, 37, '557249e1ead2188dff8329ae26849535dc10c872ddb651cfab353c18cb5af861'),
-      (301, 6, 9, 29, 37, 'c54227ad4c58c39eac0572bf59d3a8b514b63ba4402bf71ec9e694607f8b9863'),
-      (302, 0, 9, 30, 38, '4ff3e54d4aa752cfd3e6a06dad92c426134708b684b1104ffce983f893a92a96'),
-      (302, 3, 9, 30, 38, '2b59123ef34cc7b768662a4dfb039c8500a6accadd58434fb8fca082b6ac2e20'),
-      (302, 6, 9, 30, 38, '6245c6d5ec6c392fdaba7c4e19e4f5c278d72be9329137fd56724ea22e98c203'),
-      (303, 0, 9, 31, 39, '23cbe3b187375fc3d87f8e548fae99c6badebe003507437099d575f75cd114ba'),
-      (303, 3, 9, 31, 39, '4ae5f7b939a9a9156c3b42494f32aa3b127228c5eac6e2a804b189cb25a02b56'),
-      (303, 6, 9, 31, 39, 'af803631fc1cde9efa98cbf705afc2401f5762407a2300737558885d748e315a'),
-      (304, 0, 9, 32, 40, '1750967e9c5a103616d7403621019ae76be133a01c1dd6e05d511f80e7fbc43b'),
-      (304, 3, 9, 32, 40, '1869a6de2f4a0514bfd241989aaf2e2489aaeab26229e467ecc3af353ab0e296'),
-      (304, 6, 9, 32, 40, '4b3a8f5b5b90bf596267168561aa67b7429390fc1fdf256ecce0f8101c5d1c05'),
-      (305, 0, 9, 33, 41, '86b9a854c26d65d8654ad4bdf99e3af46736cfd2aa52f31441600863e48990dc'),
-      (305, 3, 9, 33, 41, '68e6a246a467baf89b5b52ba998b1292e42f4388825e3ad9c492fe31b83f0646'),
-      (305, 6, 9, 33, 41, 'fb2389d1698d4971c1d05d5c4bcdf88489b9836f60107ccba830c8509c0cab8f'),
-      (306, 0, 9, 34, 42, '55a4a359e245c8ccbc9c3772073270ff80c0829cc453ba359c3ac62bacd47fe7'),
-      (306, 3, 9, 34, 42, 'b1af01c8b3fad6f922583311a6611fec0d4900bece3776823174ba33b6d15bfa'),
-      (306, 6, 9, 34, 42, 'c32cb8b4b586513d2c4e25b007bc16a85931b665b2bb3ab723c7a6f78290bd21'),
-      (307, 0, 9, 35, 43, 'a9e9f34f84af6a9cea23e5a4e310b41452200a621904f3c45cd3ec9ec6c2a07e'),
-      (307, 3, 9, 35, 43, '39f36f3bbad047e2d06a68dc681ac6cae46dac9b18ebf8c7a76e663150faf64c'),
-      (307, 6, 9, 35, 43, '06bc29c869a670058d994e6f0ed24ab5f98cdf3a3ca35d78cf9424170f16e179'),
-      (308, 0, 9, 36, 44, 'ed7b3a76d5d4447aee2fd7e5f638ffdfe172c0acbc7534a07a6a5c93d972de31'),
-      (308, 3, 9, 36, 44, 'ad14d7cf62a608b0e3d5e8a8ef5335c202a66f1c21d6a232879d44138cad3a97'),
-      (308, 6, 9, 36, 44, '6bc089f90d6103029d4ae2b126ef8476c274963a31408b6b93339a1ef54e2a9f'),
-      (309, 0, 9, 37, 45, '631293f717c19489de28ce1175cbca7a0fb9abf3c09bb81ef183233c11b26cdf'),
-      (309, 3, 9, 37, 45, 'c975fe95a7bfd2f74c875d837734ed3667f39b1300ce1aafa5057e60f8a0d88b'),
-      (309, 6, 9, 37, 45, '9c6f116cbe663819ab933cb56929febe0abaf7162f829cb775afd2f81843d071'),
-      (310, 0, 9, 38, 46, '5527ae914e2126800cc79f48aa56d9c76d2ddb552fcfb3ae66ebd0ca51987d36'),
-      (310, 3, 9, 38, 46, '8ea93bb7643fafec8cdd413bed5bb4dbd93e82aad39bbfed57cfbf600e192d8d'),
-      (310, 6, 9, 38, 46, '95815902def3109dec348d5c3f555e892ea3e582ef76cc32536bb1ff3ae7d4e5'),
-      (311, 0, 9, 39, 47, '6b1cfbcfa532f8898f2d99d3d38aaee417d58821cb2ee92f26ff227c89d58098'),
-      (311, 3, 9, 39, 47, 'e59862b0e0a0919b461b8e5c8ed9f92a8eb31bf02b85bef3e16ad8dd0bd54708'),
-      (311, 6, 9, 39, 47, '4153c2d5395c62374155b9b909c74ae11b55032828aac63b829b41dcff9af35f'),
-      (312, 0, 9, 40, 48, '7a3741d4252b0c352794df060203a360ddadc1fb363dbdb720a9efe2906105b0'),
-      (312, 3, 9, 40, 48, '0a4441d6c8e8601e606cc0454e7600f31f7a64632bf5e44219be212738a37d5d'),
-      (312, 6, 9, 40, 48, '6805870ac7e60a876631532cc7bce5982c74134d1c8af3da7e58782852d2a4e9'),
-      (313, 0, 9, 41, 49, '1d477fa13cd4bd445fd3cc38c991a0734855f73a6d7f3e519f74a8ece74417b0'),
-      (313, 3, 9, 41, 49, 'f6154934c8b1f716d6515a21f04263672290f3e3f9dcb7bea1d9a4ee2e50bb88'),
-      (313, 6, 9, 41, 49, '230f130df28fd8b3e99d71cfac09f75c0e7a9c50fe58111d08c856220b44302e'),
-      (314, 0, 9, 42, 50, '6ee3f1907452b3fb351a67e03f0f26467ee9092bc863bbf7dc2b6d51ad22156e'),
-      (314, 3, 9, 42, 50, '36405d492e6ae0b4d51d9f37fb0808c123847ac16fc00a8ec93e90e5592d9c38'),
-      (314, 6, 9, 42, 50, '2feda3a79b8f5af2ff3c02b2c4ece79259e3d2c2c4dc764bdd30adafb7519a33'),
-      (315, 0, 9, 43, 51, '4534838c832844fe65fd20a583cb1240d39c5969ed1b63ec6fc30b5dafaf973b'),
-      (315, 3, 9, 43, 51, '44f50763ee5d47b7bca02d7b94d01fa6c35ecc9d4e56df299cb9a9c265e191e0'),
-      (315, 6, 9, 43, 51, 'd3a61c9691cf1c18c7fd662cc2f18238996700fff7d0edcfebaa700cd6618de3'),
-      (316, 0, 9, 44, 52, '39e908402c9f8c5781fb47469d1bf746c14d704786a0825fb3d4c46271a08684'),
-      (316, 3, 9, 44, 52, '38f871d78fe138bd2b9304d7b5362125a930d5afb85a37a2bbf38f19d12832b2'),
-      (316, 6, 9, 44, 52, '01eb702da8e48cedf2a8a861b3beb6144df28ded2bfc71774543428f56721cef'),
-      (317, 0, 9, 45, 53, '9d91d3a1120fc0c7da8b222f566ccd0ecafd3dc16f662b72c204c776b2f5f358'),
-      (317, 3, 9, 45, 53, '8978687db0957c1dbe3353c42d640d1fb76f914f979fda768169d74f8abc194b'),
-      (317, 6, 9, 45, 53, 'fb3f7566ebc87105e321fa8de4f59eb25daff8691a15e2536dca631ceee8cea6'),
-      (318, 0, 9, 46, 54, '23f22dcc3235881a3940b7cdec6792c0f053427a694747f21514d6b225d166b1'),
-      (318, 3, 9, 46, 54, '35cd228b4bf0cbbff96f478bae471028c10a9f271722e339801a4775c7015f80'),
-      (318, 6, 9, 46, 54, 'd203e4aa1b587fa319cbf87a6513a545e50f528531a7157ad42146514580ad17'),
-      (319, 0, 9, 47, 55, '5d21989acc6889569ea553064b9958d6ffeff82c2de85421f8599dea49a7e476'),
-      (319, 3, 9, 47, 55, '6274a2314b4f78e210dfe3965dd1a7ea7f82b8a844e4bc57ea28fb079185dc7e'),
-      (319, 6, 9, 47, 55, 'ce9fd857c4fe0586637b0c340d1ffe96e56a2132d746aef60585df8afffb8882'),
-      (320, 0, 9, 48, 16, '68f020bf50aeb00a04872f04f8f39d8f7d470e935f2e061e597543360596bff7'),
-      (320, 3, 9, 48, 16, '62f15caca5ef32d7250ab7849f9a138fe4dafdd45ec00f80df6631151e4e3691'),
-      (320, 6, 9, 48, 16, 'eb90e0dc55b1f8a9f7b7569b33d09097c2b9a61d0b5851048f39e858a5212fbb'),
-      (321, 0, 9, 49, 17, 'f79722e8faaa8aa36746b6d5a54ca9b221fce31f73c69616440bfb049e87f7f1'),
-      (321, 3, 9, 49, 17, 'bb62010e5365f8f0798c858e87115abedb9f459f9f11c4ab9eca27b76d1cc971'),
-      (321, 6, 9, 49, 17, 'e9d681fc1a63d3115296d197818fa99f21ff6a2ce05a4435b9093c3b3c437936'),
-      (322, 0, 9, 50, 18, '819fffa21e32a5c32c37ec00a2ee326bf5dfe25d76e43c7c2b649a12b80c95e3'),
-      (322, 3, 9, 50, 18, 'ad3255bc87eb4ecef869bd7de9ef177b86a9951a8aad6f37c9287401b4ac1473'),
-      (322, 6, 9, 50, 18, '6f348e9aff6799d3e5beba62ceaa1c1f31428e06d1a9dc18bd5bf364c0f0241e'),
-      (323, 0, 9, 51, 19, '7ea0d1349fbd6e31d562b2c8486cd4e73df3daf1c8c63ba8a16382792fcc84a8'),
-      (323, 3, 9, 51, 19, '24c00a9f3d4b11b2e1a83d32704c37a6e1b5e569e488dcf7dcc4b17805765d6d'),
-      (323, 6, 9, 51, 19, 'ade93aed7fc55e4b08f7c2fa875ff415826b763bdc6d416c52b4617f1200e34c'),
-      (324, 0, 9, 52, 20, 'c9750fd71d827678dfe81b55d6ef17c12453ee0eb05c8acb487bec6791052322'),
-      (324, 3, 9, 52, 20, '219de635026f0f4a07fbd7b687ca70b37f1d1e38686cf770431271a276b700f5'),
-      (324, 6, 9, 52, 20, '53c40a9aa597d7e0009de790a9c6a3c575df9d5a9c200368c1a0f2e5a3c3d9c6'),
-      (325, 0, 9, 53, 21, 'c23e6e1b28206ee891f6e2f0c17a1152ba4b62f991f540acc3876b78ab579950'),
-      (325, 3, 9, 53, 21, '50aaec1f20c6d18d26fc2d4967af3d30942dcfb4819f3e302eeeef19974751ca'),
-      (325, 6, 9, 53, 21, '133c7672751a1bc26e5549b812dda65f0a3fe746f48b952cba06d3d29abf867e'),
-      (326, 0, 9, 54, 22, 'fa14b64a2197bbd9090eada04a10d834a7fef4408bc9260cf299b526880d9bcc'),
-      (326, 3, 9, 54, 22, '8f6c55c79b6577635ec1511ecbc6f78c0989e067ac2622fb7b825fa80151f66b'),
-      (326, 6, 9, 54, 22, '4d5e65f3b0f8b00aac7be9338c117ed6052ba5174d8a20c83381e27cca5a587e'),
-      (327, 0, 9, 55, 23, 'db1b98e74cceecf628ad594caa9b114b1d2fb24edf3a5c0a5042c635c750a87b'),
-      (327, 3, 9, 55, 23, 'dd5a51418365d4674e7ab9f25ab94934d82d5702d1199f23b9676f91b5d747e8'),
-      (327, 6, 9, 55, 23, '3248260f472d04e3d6f29dace769bef5dfcc3b57a147844f2d9dbdd16c8d19f8'),
-      (328, 0, 9, 56, 24, '14c6cb17ae0c5a10c3cd289bdf2f936a6cc64c3c33d2054ef0b5864d1c7f8a68'),
-      (328, 3, 9, 56, 24, '8e8957970afdcd493f91c0c3baea125109fa4dc9a127916812340b5ebb24cb4a'),
-      (328, 6, 9, 56, 24, '552a5cbc2aec3ef8193b64a084977f019dbd9e0dbbc3afcf318ee38f006f09c5'),
-      (329, 0, 9, 57, 25, 'a5c38ff14e9d719675355a9bea47a578debba8ee756e807d117d541fa8589fe0'),
-      (329, 3, 9, 57, 25, '985a017c12f20811761e6c3b1a4fcbdd890dec3edeff563a81370d5222e23b35'),
-      (329, 6, 9, 57, 25, '4c8a3144758b99c348e0256991ea0305de72c619432960238cc9fea24deb6e2a'),
-      (330, 0, 9, 58, 26, '18c399069835981fbee9e5b781689d77d267fee4a182f22c435e73f0ade1c895'),
-      (330, 3, 9, 58, 26, 'd94a40b0b331be9cc4b76dd7aa4a5ae7404c4d3d4f5004f306b9a91944ae4023'),
-      (330, 6, 9, 58, 26, '9323d693082b00d21bd10bec890a338c03413449a27f739459909310ddbda2b4'),
-      (331, 0, 9, 59, 27, '4fffcb25e04286876b0801a3740146766e2abdfe9fb6e0f5b3a4d63a6016aeff'),
-      (331, 3, 9, 59, 27, '129ba30819ae15d49ddbd42e1c4ec85901dc4225ee723474fc00e5c8038b59fc'),
-      (331, 6, 9, 59, 27, 'bc5d856bd497bdf32c7b3c67df2cec619efc00c04b94051089fabfe57a31a346'),
-      (332, 0, 9, 60, 28, '0318b86dce0306e15022116b4855f84a4857e452dd74fed9b90ecf828525f5cb'),
-      (332, 3, 9, 60, 28, '1b28b3340673b97bd4f75ab4cbb4503054828f04a4d83c24589ebd6ea858e3b8'),
-      (332, 6, 9, 60, 28, '19b4d362fbb249cce08ae987b4b94b3a1962509f01a031fbe57d4cc8a2630175'),
-      (333, 0, 9, 61, 29, '823098a7803fd8a6b35ae9d8f8b7d673596b633a68ffc549ccfd5295e02ab674'),
-      (333, 3, 9, 61, 29, '147b66ec1530e0cc9d50806a4a4d1364e36fcac2e4e5792bcff1f48c011bb6e1'),
-      (333, 6, 9, 61, 29, '2adbb2a87c1620a6adb0c6f25b466209b5ddd6ae05333bf0673793a7a1103a1b'),
-      (334, 0, 9, 62, 30, 'e1d3fa89f0620c307dc46aabae6b84041f1ac9b452fb326d095b9b12a1740ff2'),
-      (334, 3, 9, 62, 30, 'ce7c825540b5eae06edf3b0e69a83a3e88e9086546a55cc0d950de1707929adf'),
-      (334, 6, 9, 62, 30, 'fa20619f0a2c368fb3722a233973d481ce4a5adaa08ae100cbbadccb0e7352e3'),
-      (335, 0, 9, 63, 31, '9f64f1f39279d3a6a3f63b53c169a5d3799544335916f6921f4bf3c2d786bde2'),
-      (335, 3, 9, 63, 31, '562bd8f532fb71b7fd7cfa9bd7cc7d1186d2e26a414e2b94c85125d882818af6'),
-      (335, 6, 9, 63, 31, '7a0aea297e79f28211f06dc554514d2f093ae0caa9507baca52788fc2a3ec53a'),
-      (336, 0, 9, 16, 32, 'd435f644922490082ce186c00c4bbbe55370fff6da07356f1c2c6a6f078a2b30'),
-      (336, 3, 9, 16, 32, '395552329cc173f9554eae17fbf0cd1db9e91040a847aac0bcdf135051476e31'),
-      (336, 6, 9, 16, 32, '04e6e32e16675473172f12ae3c44cbc750091c2d5f8bd41bdf420c44e6178c2b'),
-      (337, 0, 9, 17, 33, 'c8740dce7c1f40f8c5e5099c7b0634f313dcbb49e0ea030a24d5b8e118734163'),
-      (337, 3, 9, 17, 33, '7b06030a46cf296df4e30998f126b6a06c337e8d5a744c232385f9e1731a9b34'),
-      (337, 6, 9, 17, 33, 'a921e9c0c121c27225c1f41c8fb5027dbae061731aeb19c7ddb1172376145b03'),
-      (338, 0, 9, 18, 34, '718de6ce44eb09af2204362aabfd3384b9c132414bc3b4e79e2933475af33b99'),
-      (338, 3, 9, 18, 34, 'ffad07482743f47570b8991fcb36beb8b8339ce2cb1b4f391fc94860fe9efdf9'),
-      (338, 6, 9, 18, 34, '9ebacf864ae03b8ddad143ce26899b1cb95ce3ad58daa67ed462208ae7c756e9'),
-      (339, 0, 9, 19, 35, '3bc692c035c7aff3356c9351e5354ec95a527085f39ebda0ea780a29c097f640'),
-      (339, 3, 9, 19, 35, '1db82243956ae6393c1f7b95b8ea27942239b7dd0eed69f3e3b2be43025dce0c'),
-      (339, 6, 9, 19, 35, 'd762ad07a72a30ccd4ffb33cb62b28445256e7bfa50fca97c47ce0cac09be18a'),
-      (340, 0, 9, 20, 36, 'e50f05089f51080f856e3c0b2685ef9dc8b1740dbbad8e614d73dfa4c3266290'),
-      (340, 3, 9, 20, 36, 'ec42b3b012d558684d9496bddb54bf7b55d62a5b56535af06cf5b7604f3da6ca'),
-      (340, 6, 9, 20, 36, '4f91cc43069b89561d54c2d5299b7dce0f4517a9f32af890a99a38e8e15bb90b'),
-      (341, 0, 9, 21, 37, 'f0ba6132ce731dc4bfb2238356b72a666e7b48fe3c05e10382544fad15604895'),
-      (341, 3, 9, 21, 37, '2f2e993155944157b2019ab4f2387c6acf7615443e72edecbdc5bb5880b16757'),
-      (341, 6, 9, 21, 37, 'cca6d4291c1357ec09bcea7cbe447d7d6fce002fed45c2438b476bbb9369401e'),
-      (342, 0, 9, 22, 38, '00a747eaa132d7c8a3c09f11d4acc3d0de2056a481a9371dec78b1047dce6ea5'),
-      (342, 3, 9, 22, 38, '0fad0a5b64e60cc9101f44b5a7b1c1318e5d310216bf1a582a44ed3a2082bfef'),
-      (342, 6, 9, 22, 38, '5ce66e6e39a0e474f7457fb87dd02b2afdbc8a76d7769ebe521505b07be47178'),
-      (343, 0, 9, 23, 39, '0a44123e28bdbede1ce730bf84ff6462c67af184e939d10ce8546059f6edba1f'),
-      (343, 3, 9, 23, 39, '19a2f07f0b43da9db32c72391b54f8c2a222b087e5ad92e893489aae9b2a42dd'),
-      (343, 6, 9, 23, 39, '1342059f7f9a824e0d0d03cf542db9ee33d3a0aa89e0b57e9cc283ab9eb788b3'),
-      (344, 0, 9, 24, 40, '587766bc3249b80c9fc35ea06cffb996079cd0673483480bc83c72b4e96ad0e8'),
-      (344, 3, 9, 24, 40, 'b6c7219574c76963c260480551e054102d8e4cfb1d1a63ee8339e9a335957d7a'),
-      (344, 6, 9, 24, 40, 'a63c2c187bb796c4aabfadb60ec6b1c76fdd586a0c0b2d2666d5e34c90397117'),
-      (345, 0, 9, 25, 41, 'e42fc03bd95f41d0d7ca6a29c576f8665fda4786862da6a762ce27ec4c0ea064'),
-      (345, 3, 9, 25, 41, '540e0c647db8d694f309b0d25e778ada14f0e14210a110d52f989b2a85c2a4b0'),
-      (345, 6, 9, 25, 41, 'a73c3909ecf1ada4b56acf1f61593a7eff03ded0a43974795734721f06f58d3e'),
-      (346, 0, 9, 26, 42, '63a49e592730d6892df41f711c5b881dc09dd09727a0bf30903fdf8c4641390b'),
-      (346, 3, 9, 26, 42, '79be8d123bd3e7dea41302e7dc999a5ce72118f2a0eb99f5452c3e0a13d643c4'),
-      (346, 6, 9, 26, 42, 'ed087ce086ac21228d3abe7819c659d88a9c7d58e10b5f0753e6bdd2d1fa6bee'),
-      (347, 0, 9, 27, 43, 'd1b6c49588522ebc6df0bc1b1af7afe9e153654ae4f5c96d5237544906a5c514'),
-      (347, 3, 9, 27, 43, '31398a8af6fb6bde43d6ecf657b0ee8d7e2870065856a24208fd552d34289d8b'),
-      (347, 6, 9, 27, 43, 'a9efc1e57207509da598640861c39621054774566425af238d28ed343dba6e18'),
-      (348, 0, 9, 28, 44, '2cb7b33714fab85b60f942fada6f421e1970c76987d65f7cd6be3ccd503d1b89'),
-      (348, 3, 9, 28, 44, '771eb7c954a8693c7c949765e4b07580aae53ccb5310588d817858fbda1f13dd'),
-      (348, 6, 9, 28, 44, '9b8681e08ca718538d63a1866b0927cf0f045fb050beb9294c96477ec8462b6d'),
-      (349, 0, 9, 29, 45, 'c28f6f19280b2ddeca3b3143302fbb2c12358a77981a98a2af4cc8c7c61aab5d'),
-      (349, 3, 9, 29, 45, '2d9281f22ef2518b0636b87e30117bbe8d7262d9847f5099bf39ca3f2af3f5c5'),
-      (349, 6, 9, 29, 45, '9189acfda59a135fe4c3fe830a2b47b866e0d0db65b4d0cd5395d1928ae1ca7d'),
-      (350, 0, 9, 30, 46, '7b10453e3f69c0082e7ebc129f229c5f580a33ee847c9202034e63b4678b9d6d'),
-      (350, 3, 9, 30, 46, '255fef801ecadf7ba0ae2636b89b34ce056b0643cf1bafa8799aa5ab8416d61a'),
-      (350, 6, 9, 30, 46, '1441627fd5c52ddc3db0a5ba1b9906dc73d4c435715d7ffd92bb9aabd723466b'),
-      (351, 0, 9, 31, 47, '2937e3390b941c2c76255ea46e3c7ec7ee0bc230bcd376d52963a8e1e46daeb3'),
-      (351, 3, 9, 31, 47, '93f51739fd251d89a12bd7069901e6896d33e57d00a73766c43aad739ce9e7c8'),
-      (351, 6, 9, 31, 47, '0083c0f1b988d4206842a50b86cd6ee9026b680d5ccdec96d3640d2cea2f5758'),
-      (352, 0, 9, 32, 48, '7b9afd84a16f814f2eadb5d8e8b2cabae35c50b5c6891cc0344ead1a6cc69404'),
-      (352, 3, 9, 32, 48, 'e4dd71b23c4693759cd03bb38f5212f07e2361fe47eb4424931be7b975f95cf6'),
-      (352, 6, 9, 32, 48, '8ca4fbeccd529ea36cf91959b3ffbe023543c9d747d7d7406b0461cdf9e9e3ca'),
-      (353, 0, 9, 33, 49, '3a6156049a83670624a3f0428d0ebf631721327ad0bed8a40dc31f68d96ab1e9'),
-      (353, 3, 9, 33, 49, 'a8442072da8362cf3a040d454d8654dd40995762471ff1361e59ce366cc85bd8'),
-      (353, 6, 9, 33, 49, '4747755b0ba1a59f20361daa77b6f1aad9d9b047dfbbbe4b5f551217aa8da962'),
-      (354, 0, 9, 34, 50, '90fd0f3ede3d97d5f96fb77fb1718ade20bdce1eef5704074415d22566489dca'),
-      (354, 3, 9, 34, 50, 'fa26003fd86bb6c8a232d0a49cef15f24c73800e6a742995bf310edbd107c0d0'),
-      (354, 6, 9, 34, 50, 'ef3d91a1286b5a55f1a6d44a8e0f0ab1deb7ca09ad40b7894529e13b176fca3c'),
-      (355, 0, 9, 35, 51, 'dca7d284fc43217ac6445607ed3b2163fad763297566adfa3936aaf138d64cc7'),
-      (355, 3, 9, 35, 51, '8553d3714295555b3b29efaef55d85d025cdae176d81ce954d5475cf8a8e6bcb'),
-      (355, 6, 9, 35, 51, '0e4d7e3b71329a12eb2ce4562b78b8bc1c4b192e47c0b2397d75da4a1aeeb620'),
-      (356, 0, 9, 36, 52, 'ed2df4df560ae35f96e06de8c8ecf0b20438266c17913a164ec813550c2f1e1d'),
-      (356, 3, 9, 36, 52, '5bb84bf0f5dda5347eb235b0b79a3ab61d595b8d2660d8d6c32b68381122ac5d'),
-      (356, 6, 9, 36, 52, 'ff1b2fabc8f97027dd0ca24c01877998d6d940821548c94499633428417f9dc5'),
-      (357, 0, 9, 37, 53, 'cd254bd7bd616f014d062affd4bf30a5a9ceab7707605d1d72f147cf1a5e59da'),
-      (357, 3, 9, 37, 53, '53d8c843cc005cc5872bc10d68e14efc3fe5f059c5a7fb2b1af58161e579bc65'),
-      (357, 6, 9, 37, 53, 'f41ee438b0e249910719622bb4e46896f7e625d3eb65f92a5bdceea208f5c12c'),
-      (358, 0, 9, 38, 54, 'c54e8f87bdcb3cb4c62b0e62902137b3dc9c57192f9aa421a1d7d904b9d9bdcb'),
-      (358, 3, 9, 38, 54, 'a60b16cbc6fc47de9017137f87a73d41239e14346f9a42d82528e5a1876d4b36'),
-      (358, 6, 9, 38, 54, 'cc70200e78367c2d0dbe7932246237f90bbf1f2eb559b2b98edd2a71c3b0b744'),
-      (359, 0, 9, 39, 55, '2951628a98327a9c6358972b64406f3344a40ae64ec40937d37fa814327143e7'),
-      (359, 3, 9, 39, 55, '87940fd9f8e84d794f5c3363cdfccb091a86356bd1d6e9fb321866f824aa2b8c'),
-      (359, 6, 9, 39, 55, 'd341201c9bbbe8ebb452b09ca27827690c7de2584c80cba0a59fa9e1ae3cc626'),
-      (360, 0, 9, 40, 16, '969fff50bcde4211daff0b3c7f3b5a49d29dba1c4e9b2b3708d54839fcba9ad9'),
-      (360, 3, 9, 40, 16, 'fc891fe927e275767aae98919e5233e10ec90495cd058299408a52625e289354'),
-      (360, 6, 9, 40, 16, 'bf287fb459bd4c393f7bbb44e7c9b2712da441d6b68337db921a4d2b6027ce98'),
-      (361, 0, 9, 41, 17, 'afd9e97e2bf1c4406ce13ac0d812bcf419f8261b5d2558c3634f9e293b14b84a'),
-      (361, 3, 9, 41, 17, '445ddc53fa96e6b10cdd49e00e8000c8893f56b16de3a25e87249dd9dac2bafb'),
-      (361, 6, 9, 41, 17, '423c71b2a4997c6536910f90c9d1a558f5f6a52680188c0b406babd61c227cfd'),
-      (362, 0, 9, 42, 18, 'af74c3e02101ebbc0382cfcc5cb963b56d6b1abc71510e1858ebd9c1cae39fdf'),
-      (362, 3, 9, 42, 18, 'b068ed5f3d3c69bb4dc26623672441bcbc04bf4d6aad9f9636fe522d32808578'),
-      (362, 6, 9, 42, 18, 'c1e82928161d1fa9a4afdb6a945458e72e7ccf8d1eb375a8abf226bfa5e1a51f'),
-      (363, 0, 9, 43, 19, 'ecf36c9b8efa998b06adf5167c1910c74f9e0301b267a313a091b5021a0349b9'),
-      (363, 3, 9, 43, 19, 'dc4acab29e207b6550b65a762243c2e10624c235436f71c627843179bc9a08eb'),
-      (363, 6, 9, 43, 19, '21e816858683d51e9b7a004346f0458ac2be03938ba0ecbd922bc3e6c46b08a9'),
-      (364, 0, 9, 44, 20, '88d99b7b36eb92fff767e76a1c711394b3f873c67e9c25e082d567186817d6cd'),
-      (364, 3, 9, 44, 20, 'd967a2debd955ddc7f5179d9a5bc6524ea448f8f44ad784368a7885363780195'),
-      (364, 6, 9, 44, 20, '18c48f30f5f9d44ab4224bf6b3d3928d77af916f15001088f7ad7933c3feb264'),
-      (365, 0, 9, 45, 21, 'c9dfd4603b35c39df1304c51245db19a2ed9894f14a39b11bf8ddb86bfd5f8f7'),
-      (365, 3, 9, 45, 21, 'cbd86a79f8536fda17d6c6653dbcefda7741c14fcb43f5d17f0f86c4ff77d7be'),
-      (365, 6, 9, 45, 21, '86a5bec9ec2f055d77dd9a4911a056a72f6facb8b0ed4864a63db4bbec040c38'),
-      (366, 0, 9, 46, 22, '57ab134bbd06d6f8812a275b953e802b8e51ebf2e36cb10f334bd3a1eb418404'),
-      (366, 3, 9, 46, 22, 'bb417f73bd87e99e14558cb12b0f2468f5a679158d41b35fd4e37a0d57020c15'),
-      (366, 6, 9, 46, 22, 'e757258a3e9d3eb8fddb5ecc74dfbf487497d802833185becb45ebd9b71890d6'),
-      (367, 0, 9, 47, 23, 'a350b8a33871ace19c1453ac1e091dd0111bafe65148ae836165f7422128a1bd'),
-      (367, 3, 9, 47, 23, '91910cb1b2c4677791cf749b2326e717b26d63927402b413fa6cde39721e4ec7'),
-      (367, 6, 9, 47, 23, 'c7554e57e9e8790f8b1b8a7f16a54e4a31a8c20587ae8e0f0d7950f32425dedf'),
-      (368, 0, 9, 48, 24, '8377c0986399dee7d6a515e0ece0bc7285ee99de1a0a08ea6cd7cc555cc45fbf'),
-      (368, 3, 9, 48, 24, '3f70055fab97905087607c6457d163e79b93a47c84b094c60f000f4a9e06aeb1'),
-      (368, 6, 9, 48, 24, '1abfe45e849b3b0d9a8e6b142c11b1dd2e0410fe7ad75fc1ce1b5bff6c160df7'),
-      (369, 0, 9, 49, 25, 'e0678696f9a508beebe7a520da246222f1d7d548bd5109936fd0468142ab0fd2'),
-      (369, 3, 9, 49, 25, '96adf5b36ed4c926f678f8687efe3d2f2571934be03c03794408d3fa00d5454d'),
-      (369, 6, 9, 49, 25, '158d48e81cc7f02260d945d6615ec49a72ae682f922e9764bf25b756619d5997'),
-      (370, 0, 9, 50, 26, 'dc9783435c2ccc2b0626213998071c3341ecfee0d52f2b487aa4fd3d5823e499'),
-      (370, 3, 9, 50, 26, 'b06f13000bd8afafb08d463b8d43845f36a7e2ae6493bdafa5a21e541284b39f'),
-      (370, 6, 9, 50, 26, '1efe932891f4b4cc748465ef9a198424aed5b95300bd12bf4735d0180ce772fa'),
-      (371, 0, 9, 51, 27, '88fd1b8d82ce09fdc4fa2373204470d1f2162a9aafa9dfc0d8f59c318b3d03cb'),
-      (371, 3, 9, 51, 27, '9b9dfde71a3d3e0d404fd3b5deea9a3c9ade394b80364e082a161667d3a26805'),
-      (371, 6, 9, 51, 27, '66dee915908a109016ee0b45f8463006434395dee206f5a24185bf88a786f775'),
-      (372, 0, 9, 52, 28, '91f610f5a189487a088b8904ffcb1501ede3990344cb6c4e1dce5faf65c46c69'),
-      (372, 3, 9, 52, 28, 'b0d3c4389c4fd23ce7cb066068e49ce4dcf55225c1a9089e042d9d988a34391e'),
-      (372, 6, 9, 52, 28, 'd051f8b150c170d97f9d3dd0d07adee6ae8c243752ba0fd332c390c5f20ce005'),
-      (373, 0, 9, 53, 29, 'f46631cc554116a5a076770d3187fb544ee9556b3ab5ac8d536cd5b374ea5254'),
-      (373, 3, 9, 53, 29, '2471b4ea9fd24f5312213ac725ac9c701b7242f2248ef148ea438d8bc7676d21'),
-      (373, 6, 9, 53, 29, '6b2223b87893842ec5ff2adea74a8df84a288962452110ec5387e09ff5fc22ef'),
-      (374, 0, 9, 54, 30, '47a7fa0f198ca1283ad679c4d1033cc58d3d68c7920a1153fb6ccc6c905f79bc'),
-      (374, 3, 9, 54, 30, 'cbd9d7ba7ac6a0cd00972c8960b4c3c56cdf3a526a26eb1f3bf4db3ac0e0021b'),
-      (374, 6, 9, 54, 30, '3ea3461b2cfd3e59628adbff596af8596353831902831d3dc881669ecf308ad1'),
-      (375, 0, 9, 55, 31, 'a60f50d4ea6570811280de3f6f124944c323a45a396abdee4948c6632e82ec0d'),
-      (375, 3, 9, 55, 31, '5c46abcd1056ddc25849c55881fe597549d248694bfd460b9aedad80b683e8af'),
-      (375, 6, 9, 55, 31, '8d4d881a9015e4954bf88f980e4ce142516ce20cd16c0c80e748d5d612de563a'),
-      (376, 0, 9, 56, 32, '89f05ca7b5718dca2e25a191b97dc9c3649d17af10ed70f689b4efd4df36de75'),
-      (376, 3, 9, 56, 32, 'ddd62bdba7747b0bb814275983c1d3d199e81c69c5d0c63eeea389d8483d763c'),
-      (376, 6, 9, 56, 32, 'f8d4dcfb72adfea7fdf67f99e8197ab287a53a530e686a76f10b891118fa6102'),
-      (377, 0, 9, 57, 33, '6397dea6638fbea535b505c3e128568433529179e36b5138a71b97a84616fb13'),
-      (377, 3, 9, 57, 33, '8b359f6b8f7d578f71046a9a0f6f7d6048b34004e347e4552f35398954ebbef1'),
-      (377, 6, 9, 57, 33, '4822a7d54d985b6eb7969ab61742660c94c0865cc8c681dd46e3e56396dbddda'),
-      (378, 0, 9, 58, 34, 'ce2ba1215c3989db29bbd18b70b89a957ee3ef6724931a02f0d11812abadf750'),
-      (378, 3, 9, 58, 34, '8e6a831e2ac4655c23f10faad7bb41efc241855d0157130771babdf2168e3e3b'),
-      (378, 6, 9, 58, 34, 'ef20dd95316b9a36fb28f1aa7bbec5af4c48e0c04086cc6fc663ca0f2f9f17b2'),
-      (379, 0, 9, 59, 35, 'f2855fe6addd308c361344446a74e8ab7d300c13f2802847de1f943d87066dbb'),
-      (379, 3, 9, 59, 35, '91594cbe5160d1408e18ff80395fd1973a8e04fb449fd5e76e6d84b13c26c239'),
-      (379, 6, 9, 59, 35, '238bcc44e4a01c519d442cd541378692055931b686e9f9f39ec884bf56f4484e'),
-      (380, 0, 9, 60, 36, '46b73e4ed410a8ef7d923b9e97d838c0d3ab34a9578c73195a2603a42f3eddfe'),
-      (380, 3, 9, 60, 36, '454d959e36c2d66dff37e0ee125bf5149d5ec99e7c7a6b5e66cd919ac141a1b2'),
-      (380, 6, 9, 60, 36, '73ebd93d77fc7e5c478244a09fcf20758f1698fab6c7f2c043b123d201da8602'),
-      (381, 0, 9, 61, 37, '58836f681640b9cb9908c4c092ca88ae98528be5722fdbca05496f4b642056a9'),
-      (381, 3, 9, 61, 37, 'a6503d912dc387e9e17b256ac5cab5e4c1cc83478aa78c5fdc85a7d82a0b671d'),
-      (381, 6, 9, 61, 37, 'd4fbafea5dbb2a94c238cdd21ed6390d931961cabef515b494d26431deb94943'),
-      (382, 0, 9, 62, 38, 'e4292486761589b9bf2e0117b1f3d8d1b37e1aa23232ed1bdbc205ea8a8c8568'),
-      (382, 3, 9, 62, 38, 'b8b45d624d11852c0cecbb65a2dd67d0f983f40a41f3cb6446772b14f83a3fc2'),
-      (382, 6, 9, 62, 38, '8f00a058a9cf87f1d85e38f321500dcdc5e4c703ec24b077ca4eef24521ee5e1'),
-      (383, 0, 9, 63, 39, '3fdc5619e34a0124605d6042d9c090883bdc7d7474d5d498e34eb086be1adabe'),
-      (383, 3, 9, 63, 39, 'c1b310b8511007cfe6ea5a61502522efa2f25f071665c2ee7bca8b84086972f0'),
-      (383, 6, 9, 63, 39, 'a7fe2c0b8c42aea06d2be0f225d2d3bf602e544f7f1d3e6efe8c39b39d881df0'),
-      (384, 0, 9, 16, 40, '854d91b38378ab632657e5d9ca58a9635801152516274233485e2fec8e2b495a'),
-      (384, 3, 9, 16, 40, '5accfaece944999a6e50408cbafe2e5e4f62fce297675746a017a082e37d9789'),
-      (384, 6, 9, 16, 40, 'c46ff1baa17dab3754b5c908f610739f857a0874dfbb3883ef674dfc41dc4e16'),
-      (385, 0, 9, 17, 41, '7a0acb97bfec6101e4d13a4d031659da5a66947770cc1e7db13746c789451223'),
-      (385, 3, 9, 17, 41, '4e0300f2ef8cee202a62eaaf6b8d50dd28c7142ba593604b23d934e48dd23d0d'),
-      (385, 6, 9, 17, 41, 'bf6e8464fad2dd74464eb5a64ee9fdcc0271d8a3466981f00056b58982fa0522'),
-      (386, 0, 9, 18, 42, '8a36a5f5289c255e889f0296aff90b3f64fe446e7efa6d696d25b0a975383221'),
-      (386, 3, 9, 18, 42, '358b7d1e4cb9501bc98ab47eaed37e265767577cf64ac26af37065893395106a'),
-      (386, 6, 9, 18, 42, 'e3f84ddd215b822d08a05431be3466ae8eb647b2e8f2153e677b2957a14111d8'),
-      (387, 0, 9, 19, 43, 'b9a728f739687b4df1b4d469d3e89ac5172ff414a10c8bdbff3f1427a0491d66'),
-      (387, 3, 9, 19, 43, 'eacb57c058886447d2a7f8aa1df0db16467c3dda7c18a948309abdf8848a3b66'),
-      (387, 6, 9, 19, 43, '1bbd76e3093eb414d8248d4db061daa78b17b5d4fba68197c0ce16f8bbe0206a'),
-      (388, 0, 9, 20, 44, '48708ca2c6a9c2c233e22f24d79d532bcc0abf04efb97c1f9584f01a91d60226'),
-      (388, 3, 9, 20, 44, 'd8839ff4c6e092f71e364702f81cdfdf3d5c5d43616932959c1955397456b3dc'),
-      (388, 6, 9, 20, 44, '0e05bcf92896d3749aa7739a2c74fa33d031decaffe34c1bfba8ce5af3808fca'),
-      (389, 0, 9, 21, 45, '666288b8426677f15d17b89a6ed42b804b1abfdbc20a071d19f6b626a6915042'),
-      (389, 3, 9, 21, 45, '69b86ecc24abda6ed93009b7584959c69ad0ba748cb6d60b2ce8c38d0b3067f2'),
-      (389, 6, 9, 21, 45, '41b98855fc6a7aa341585318d7a628cacd698280d73454dbeffc6d3725f2778e'),
-      (390, 0, 9, 22, 46, '023b29cb1272dd8bdbd7ad0c94e810963eae76f52e226620ce0f2cb15ee2af96'),
-      (390, 3, 9, 22, 46, '0d480e526cf4eec01b5be1b3cade05b93b4c89ff1ecd3ad6987cc4ca677ab46c'),
-      (390, 6, 9, 22, 46, '9a3f284aa1f5f3ecd4a6e893f02bfbbb801b5501a209366e8471b8eb164e345a'),
-      (391, 0, 9, 23, 47, '4be12806c32f427297e2e77fce908a4ad6f70a227c7d240186f1e9d4952ca568'),
-      (391, 3, 9, 23, 47, '30021c114d8e2a17a0e43ea68e9c5618567c06850e0c681003c51765d7a58553'),
-      (391, 6, 9, 23, 47, 'a9a42387a24bccd094ba1ca3083b0761b1272bbe45308c0374de11273503c2be'),
-      (392, 0, 9, 24, 48, '99bef1c6008b8956dc283dc7cfaa83261db4fb0641a23392f0a20d52ea88df10'),
-      (392, 3, 9, 24, 48, 'c77c50ac59c65c375adf5d040f1005c91ab81f63effd8487f1ceb802f54ca1cb'),
-      (392, 6, 9, 24, 48, 'a529e8c51871daba2ebcd2ce3520bc431bd50a3bf562ae3ccc6a9113056e8d61'),
-      (393, 0, 9, 25, 49, '8c14193b071d97bf0278fc03cee2f1987c79fbe9c7299d494ea4485cfb7bdba8'),
-      (393, 3, 9, 25, 49, '6df9b269d8a230e653bd3b95db4a56518f40f3c6ab4f95d2312c5cd36765d0e8'),
-      (393, 6, 9, 25, 49, 'f20e43b0bad6857764ec93a6dd7b57802e65e3a5c0ff41e6d70fb0278dbb31a3'),
-      (394, 0, 9, 26, 50, '6708a3a3325f5ba022cfe29ba63521cbd7787503b3fbcaf25d9fdaa26796aae0'),
-      (394, 3, 9, 26, 50, 'e27e203c9a5c44f0989a4c5ef083cb10ac75ffc031d29e3fac6fd892abd0d554'),
-      (394, 6, 9, 26, 50, '1cbb739a11527c981c4848a1ee3c1463a1ad075832ab616bcdec59b285e878fd'),
-      (395, 0, 9, 27, 51, '9bde9940d9a90451932ced1657b2267374e7416a77847ab9ff4acb831853e31f'),
-      (395, 3, 9, 27, 51, 'd421af2b7966ab80f52a4d893495a105f47d20cb4aab4502034a14e3e2747d81'),
-      (395, 6, 9, 27, 51, 'b676ccdfc0ec34b1db5e5b6cfc32767c89fea57ab04d94e1835a9305ef28b47c'),
-      (396, 0, 9, 28, 52, '34f0bc3a0298e59304aa8015061eb79929ac4db607cb04cb4f94d9b40446f3e7'),
-      (396, 3, 9, 28, 52, '90b13ecfcdacdafeb2e769ccc6b01412d5fb5ed36766eee93f1bfddeb767a469'),
-      (396, 6, 9, 28, 52, 'b1c14d89cd9f624e6452a608252d13fb1530ed3248ea841b058f0c0338999b29'),
-      (397, 0, 9, 29, 53, '430aaf82302e710d865221d1d33a683b69844552269a4e4352bfddbe49e103f9'),
-      (397, 3, 9, 29, 53, '6c105b210ed581820ab741a5b45b732978dcd048520a0ee646563a6da23f6f6b'),
-      (397, 6, 9, 29, 53, '7fb5d730339ac3a700913d2aa5a58004f97cdd278e24b9fcdb1fc0972e3df639'),
-      (398, 0, 9, 30, 54, '04a33a142bf870e3326a07077655019c2e7c6bec2e3a6a245ce533e1e7044057'),
-      (398, 3, 9, 30, 54, '1de5c714e22f228e9a2338d732823af9ea25899407702f86f5f1ebe35859eae3'),
-      (398, 6, 9, 30, 54, '5b3ef24ad8c99b18bc64313066b26ea16968ca50b564eb8f0056e9244481cafc'),
-      (399, 0, 9, 31, 55, '87c1d22fac0d7eca27cc21e25f3e6c1af5998b8bfb5f2b876dca34cec08f361e'),
-      (399, 3, 9, 31, 55, 'ce3d4dfc97428b1fb9eae7597c0b646fa8223d9fe65f3cd845fc62a4d8132a23'),
-      (399, 6, 9, 31, 55, 'b5602d51f0a3e00b9577a42520f7662c790d86a5307260e37608793cca78fd05'),
-      (400, 0, 9, 32, 16, 'e0a35bc714cd764998c5547014941b146c21408f571da1202f2350fa1c2dd761'),
-      (400, 3, 9, 32, 16, 'b3f5e1ad3af1f073a184445246e248f8a939466e07b957c9c274d49c5547d966'),
-      (400, 6, 9, 32, 16, '7b24fea10e7e3aa739032673de0586e9473dee52f502288c006dc81336f06888'),
-      (401, 0, 9, 33, 17, '5a777ccee7ca0eaf9c9ac97bda5bd9a9f0e528f45e198e6e4341faec69812fc3'),
-      (401, 3, 9, 33, 17, '04dccfb296569aae6a7026a9a71fd2fd97f1504d19152ae8641d4c51ce8b1be7'),
-      (401, 6, 9, 33, 17, '6972a403cc230425a389105b37c86afe6e0d1ae450974fccbf6f1dc5d69cc5f1'),
-      (402, 0, 9, 34, 18, 'ef63944ea095a0106de03b307b6f8a35bf7b1d92894b74ca8589445a9fed2ca2'),
-      (402, 3, 9, 34, 18, 'd22df0be0d4e0031f055b487b90a55381d46e91771ef88e4c0ff907104d7cfcf'),
-      (402, 6, 9, 34, 18, '883c1be846e76e42b40cd1dcd0c67da8fc08b88b67f7dd13723e608d27a85942'),
-      (403, 0, 9, 35, 19, '4ebefba9b3682d9507014ef62122c6e4a65b7394ced5e5141b7c08c5867a2b7c'),
-      (403, 3, 9, 35, 19, 'e2e1bbd3112e48f87f51ba696672891a5b33f6aad625899824e6329000e90474'),
-      (403, 6, 9, 35, 19, '6db346e7c6bd5d7bd3fa607ed0e1bd4e55eee0016382a7f166edbe2b0c388836'),
-      (404, 0, 9, 36, 20, '791b9509a47bf690b323c6b994818254c513f223a6eebac61204fba4dc1ef99d'),
-      (404, 3, 9, 36, 20, 'b81f1a7eb40656dbc7f5fd98422e58ad287844da99d28ed7ac268bf446c72481'),
-      (404, 6, 9, 36, 20, '69c7cf5dda6408124ad93ea4ab62065e1a4e56b839f7d4599beffcaa7796af04'),
-      (405, 0, 9, 37, 21, 'aed4c8d5d8dda50697b48ca4d60b1a4fedb9b36543d79bdd14605fcf67622b5e'),
-      (405, 3, 9, 37, 21, '5de11c2623840d63e0da14176349ec58951d148dd41ae33ce227ba2d63876ba9'),
-      (405, 6, 9, 37, 21, '41985a2a8b1c739da387274481d07e1b6f2e9bdfbae18cb2a3286263b6811f34'),
-      (406, 0, 9, 38, 22, '3c750cc0af217c543b90cee4e4f5ee97b4a483f50be59c21679a131a1e1c8de6'),
-      (406, 3, 9, 38, 22, '74b7add77748ce6e46e78ff873d83b53c51b60853bec96bdcf7946a1c80e2ce2'),
-      (406, 6, 9, 38, 22, '687f60830079bc7f6e640a1fe29d101942d7db1e9a52cec68a0ac40c53b89f8d'),
-      (407, 0, 9, 39, 23, '19153ce751821b62c8a35ca56bcd8bf49c993bde45218ca4ff14b1cb9de81b23'),
-      (407, 3, 9, 39, 23, 'd7919b318a30200d205d44b09f2447520bdd56210eb545bcd8bd53cf20d08d3d'),
-      (407, 6, 9, 39, 23, '2bebc852a265e0667cb9a95891ac4b0729702883f91abf9aaf166141a6eae0e5'),
-      (408, 0, 9, 40, 24, '522540d1918e63655ddc7c31c0b50e2deae3a2a0f0bad46caa9cf7c4dd9bb401'),
-      (408, 3, 9, 40, 24, '8fc6ebffcd2a8471dcc8b6da71e86facd7b6bd5a23d3a94a84fd89a0d58ae831'),
-      (408, 6, 9, 40, 24, 'e6b7103c3b9faea4bc0668b8e55a7a0034657d1ebd3a03b32207809951f9919b'),
-      (409, 0, 9, 41, 25, 'a8ac162a314b1fd01d0ab17eadd28a754453fa75242c5e465d744796b80160f1'),
-      (409, 3, 9, 41, 25, '6ccc1d5cba939ec970b681e52be3ec84cd2eef3069dcb4d8e72a482394fb983e'),
-      (409, 6, 9, 41, 25, '07765646b12e946d819353baaa561d12d69cd7f6823d805c4ed5eab2f5adc164'),
-      (410, 0, 9, 42, 26, 'd040bf1de52d1cb6f6d1f8a29cafedebc406fc95b445ac531c3b974de0a88788'),
-      (410, 3, 9, 42, 26, 'add81168dd14ad71dd31c37ea77fa533923f0b7f8a5a9b6e9a4e61fb265c2645'),
-      (410, 6, 9, 42, 26, 'dc7f792b624570e247166c83fb47d79e1fec11062df267ec5c71789e938eedc8'),
-      (411, 0, 9, 43, 27, 'e2418355c1de8fdb648543164090ca69657a47181ec0db4a8bef69e894194a98'),
-      (411, 3, 9, 43, 27, '75a27622efd5edf20f1229e7cbe4584549e65ec16bb5d0da0863c5826870ea96'),
-      (411, 6, 9, 43, 27, 'e8a76663393d598440903ec937be71f090c5a11fa3e14ef30f6e48d121e765ca'),
-      (412, 0, 9, 44, 28, 'cff4bf516f9ad7b66a09551f5d0f34e6831e385b9f17ee7f48ee9c055dcd9e5d'),
-      (412, 3, 9, 44, 28, '628d86d609e7701ea9ab945b62ee9bc58ac1d800ba2532f143d92f4ca4b0e9ff'),
-      (412, 6, 9, 44, 28, 'b33bd1ed4596bc9c33c107a5b3c531aa2403de0e3e2c3a4caafc90eff10707c3'),
-      (413, 0, 9, 45, 29, '5605688f135e182aad3ba733521b5d6c6ba27193be83a3a42284b4266d63b704'),
-      (413, 3, 9, 45, 29, 'e3d709d932c6aac677bef17cbf0367c0f77fdd44072d5c4d91601301e4846e47'),
-      (413, 6, 9, 45, 29, 'f6f348d9418867696e85e11035d02470eb54570d55765fc1f3f109a026740567'),
-      (414, 0, 9, 46, 30, '08bd66738d33dba5721ed09f0f75233bd8aa9b77c2d09539cc5ca49075d855c1'),
-      (414, 3, 9, 46, 30, '965a33c5b55db31247859252a0f5be5a676e987c9a7ecddc556a809e3c6f205f'),
-      (414, 6, 9, 46, 30, '58c9bc88f0050bd085ed5b1e2ee3b891816a3735ae3a56365f07b079f77d2d83'),
-      (415, 0, 9, 47, 31, '5ebb0e0ad2d731542a75389e04758f8e5eea5d6485d3e84c835bb5d961118c66'),
-      (415, 3, 9, 47, 31, '50d3c55775ec794da63a89ffd6487371d1275827540323e97a4bf5a5d8cce133'),
-      (415, 6, 9, 47, 31, 'a302f423964e198a9cbf25dcc5bddb4df3aaf13fc586efb2d333fa26bcebbf36'),
-      (416, 0, 9, 48, 32, '66b0078eecbd6b5e7fc8668228fd0cffa9523ad0c8046719375113e859a60795'),
-      (416, 3, 9, 48, 32, 'b855c1c97f01a835d1c864e1fd5c72e5ccaa4ca9c55ed46c00bd3c44b1f1264f'),
-      (416, 6, 9, 48, 32, 'ca72c7bc78d2dd2eaa73cbab85d742e245c25ed73d80c4e5c7a2d7d2cb89287b'),
-      (417, 0, 9, 49, 33, 'ac32082281603e511ab07a0458d5aa7d7a2f770560e9136647e40df6a140852b'),
-      (417, 3, 9, 49, 33, '959d0ac47b91e2b3d12fb0649849ea87e139c882922664c616b9ae0b45072ffc'),
-      (417, 6, 9, 49, 33, '4c8745f598ae6e2af551c49ddc9c5799f762d505a2b7527303b309150ece87a5'),
-      (418, 0, 9, 50, 34, '17e9fa05bc58beee4e5ad48ec9587587c47fe8bd9e7807897454e6bcb555f460'),
-      (418, 3, 9, 50, 34, '267ecc087aa1e9063387f712507ea38c0e2b6979487cda1549cbe6807d4dc5ac'),
-      (418, 6, 9, 50, 34, '43353835be308681d221cf36fab8ab621ebf2ac16ba6d2d163aaaf80320b5dd7'),
-      (419, 0, 9, 51, 35, '307b0e38049a2ec51137149e77704847bdc01e81d1753fc72b6a160994d3b371'),
-      (419, 3, 9, 51, 35, 'f133f12f0f73e0b76d931e6e784d43570d4ec767841cb6c4ed810423a29d1484'),
-      (419, 6, 9, 51, 35, 'a89fb4c595ab26c63245d449bda0eb0ac77d79ae3bd91214ac29c7dc59905716'),
-      (420, 0, 9, 52, 36, '3ecdaafc7b11602f51bb4de491141d5430ac621e41b3a00ddbb4cbafa0da9808'),
-      (420, 3, 9, 52, 36, '40a10e2ba6c3eed83aae12780ecab12ddf7f3aa41186cc8a59b61809cb8290b6'),
-      (420, 6, 9, 52, 36, '2f1da7dfa5975422c8b35170215b50a7e683f60bb1370aa12d172daf6486b559'),
-      (421, 0, 9, 53, 37, 'dcb9052f06506f5c398d6b49385d225956e94df4913338a3422cf05556618d25'),
-      (421, 3, 9, 53, 37, '9a7fe91317f93000af10f020ae3bc033374af4ba2eb0e514c08bd2cc4512cb6f'),
-      (421, 6, 9, 53, 37, 'f751d8b65852b28bf2075de2c4c48f2f459ac28345e09d88e908a2b9230cdd35'),
-      (422, 0, 9, 54, 38, 'ad94272f6eb009d19d66b0cc7e6cefcc2e2c2724b14b4a516c843d4117f5c43d'),
-      (422, 3, 9, 54, 38, '5a3950e5b083d35231657f506cf47fe51d18e4990d95f5808346b83cf07423c3'),
-      (422, 6, 9, 54, 38, '32e88872f4a11cd8378db957e76a372f9a0d40fd88f29ea05312e00acb9e8ad0'),
-      (423, 0, 9, 55, 39, 'f2a5f3ee2763ecdd2814bc00b08d032020b5515c37bce3139b98fcc101e82a9d'),
-      (423, 3, 9, 55, 39, 'd38d4178f28e0eb05df863bacb1a2e9d6242b02a19c747a0768db83eedb88613'),
-      (423, 6, 9, 55, 39, '20a696b6a22e16d861d00f3d1331677a2591eb00fa287ac02c6f0c11d93a60e2'),
-      (424, 0, 9, 56, 40, '8c8aced0b731647c9400bb35bf02cdf81420bbabdfbb31495fbe6f6ebfda79b5'),
-      (424, 3, 9, 56, 40, 'db658a773351228926445ef11f9a6a595a2730409ab618b8c4d6b93e5e9b9cbf'),
-      (424, 6, 9, 56, 40, '4ddf345dd6721c5ca1d1e055f3b619e44059152e3fc15febc3b3336bfe44b47a'),
-      (425, 0, 9, 57, 41, 'f71ec99c8bfaccee75c8993f4935d66d8aa3fda12fd622609483e986ef4b1c54'),
-      (425, 3, 9, 57, 41, 'dc8b8ff63f3b281a39bd6b58cd34b2df1f821a3f511b30f2463b98a2b8295617'),
-      (425, 6, 9, 57, 41, 'c2b777ef570f0392284d044e0ba6ff5c63a4e62319ed115e7664bc09957f9b75'),
-      (426, 0, 9, 58, 42, '6a4f990596843148edde8cd776f36d83bb7b0daa66eeb64d2ddff07db968138a'),
-      (426, 3, 9, 58, 42, '95c087e32829c648e7f0b2c82f6f6f265851bb48503ca7d3ff30a69a8ed72f4c'),
-      (426, 6, 9, 58, 42, '88a5ad0abcea2dc2418ffd5fadc5f4182c5909d9a0b95aa10e0da4db8439a2db'),
-      (427, 0, 9, 59, 43, '33af2c4dbfb0dffa8a3cacfba0259a1a78299faf6420a85bea7cf632b2660d59'),
-      (427, 3, 9, 59, 43, '82c5b98e7a840bd25419f27d4bf90b2009f70a5ba041e4f3b17be4f24846bd83'),
-      (427, 6, 9, 59, 43, 'eeaeccab963a418f5bb45de305aadd2d526c7baae8fcc3e2891010366ca2883b'),
-      (428, 0, 9, 60, 44, 'bc8611c98ab49006cd9a23e6dd5b2749d17fbca39b9b477a7828dedf8d8ecf8b'),
-      (428, 3, 9, 60, 44, 'd8765be2559b9b2af8c2ed006115725bbcd7ed35a82edb2ac0b72cae0a3d78d5'),
-      (428, 6, 9, 60, 44, '4c9c819d9b2be6c0434fd75c6ab6a18c8cbd34d588a890612f71ff9702520cb7'),
-      (429, 0, 9, 61, 45, '61054aabd9255b0b9e27e4b83e1d5840a7b87808595d464018f979c84402c44a'),
-      (429, 3, 9, 61, 45, '471d43e52600250f00715113d1b97e3c307bdd32782367fc1e8026f006864abe'),
-      (429, 6, 9, 61, 45, '2ece890f7de260b754c106b54b6e87cc634cd9c37da24858cf6941db4b429f0e'),
-      (430, 0, 9, 62, 46, 'c7519e480a7d27602bc8a47be1e744a41996da7761219de3beb3694b082fec52'),
-      (430, 3, 9, 62, 46, '373accb0427566340a08ca19b06faca4e91faf96c63e77391011cf01785960e5'),
-      (430, 6, 9, 62, 46, 'd95c0525c28036be6cc19be05066fdaff6f795026922cd6c8764b4add7cae725'),
-      (431, 0, 9, 63, 47, 'd4e8200a4db7d40dcf0c1eebf8c152fa51f4099a2e052d820abf1fc3268b5e99'),
-      (431, 3, 9, 63, 47, '21727486ddaa5e3bcdeaada0c9a7810ca53a8d0cfef494890deb8936cb39a98b'),
-      (431, 6, 9, 63, 47, '0b4ae64c9a88e203ae28672c71256ce071afbddfea54de8a04b7958f5e5a64fd'),
-      (432, 0, 9, 16, 48, 'b21da1aca2129bed84b0ec8a134a3dba9ba8b9589b6cb544ae3d9d4a0389ec4d'),
-      (432, 3, 9, 16, 48, '077687d07b4dc4c8e8db116614ec65e45f5b804e9d8b8c2125f43a6d84cd7578'),
-      (432, 6, 9, 16, 48, 'd5ec8cd2d9a9ca4f817ce2575a5c5ceddb108f8f4deca17448cbe35f3b7bdd6e'),
-      (433, 0, 9, 17, 49, '37a6611d3c442b9db098a22007489cecc37ebe7baa3ca8b9406fff07641203c4'),
-      (433, 3, 9, 17, 49, 'dc1a953491ceffc5bfeba4b250cf335e61f9e5acf7ccec9c698602c495d1502d'),
-      (433, 6, 9, 17, 49, '122fca39f532622a85d8be67ce04a1541935961016ea4dc0b1fe62842461075e'),
-      (434, 0, 9, 18, 50, 'd595933d355772bcbc76c45b679e15331b1f5ed90a9eeb82b92990ad32755048'),
-      (434, 3, 9, 18, 50, '24963d4262d76b41496246efb25c5a7c4b7b2b13977e6b21ed03a457810276a5'),
-      (434, 6, 9, 18, 50, '4571302b6bd8b71e6c95a9ed6ab6c10e82eba9b88d25da6eca71c25da893860d'),
-      (435, 0, 9, 19, 51, '4e636533f79064df91abb12229aef36d9185d62136b6c7a07d0dd31b397a41ca'),
-      (435, 3, 9, 19, 51, '009c6aa586bb3cec1f6f87a60d210883030a6dd8d657d97a3fb3df655de80057'),
-      (435, 6, 9, 19, 51, '33dccc836838f6172592eda9ac151de28822e4ab8219ce25a45da295e19a79fa'),
-      (436, 0, 9, 20, 52, '621408443c9bbb93e7b4eb2fa059639a780def34fbcb888ad5365270beae7c64'),
-      (436, 3, 9, 20, 52, 'b30cb805c1b361b6c11cec409be889fb5fab543cf9c1f5089cf3b30defbc7d7d'),
-      (436, 6, 9, 20, 52, 'f7eefc6d1c9314697a88302c6c34cb3cae948b31aef54711a83b2e341e919408'),
-      (437, 0, 9, 21, 53, '61d895a98916d5ce627142b88f59e75e70cfac8c55f56553d51978c7460514eb'),
-      (437, 3, 9, 21, 53, '8c2548342b033bfc92cec5920c0f056d5cb3eb760d9c9593176c3ea65ed3de7d'),
-      (437, 6, 9, 21, 53, '5137168b2ba622130779c3e43bc9fe796048563720fcbb73ab84c18d3b5681b0'),
-      (438, 0, 9, 22, 54, '3071e8f3433f85d501a9ae93ec0658b3243fea03a46b1f34b311be6d5342da11'),
-      (438, 3, 9, 22, 54, '5083fe8d9f33bc77ecc094fdfa9ac43e074d0aa15fc49aa788e73c7076c393bd'),
-      (438, 6, 9, 22, 54, '6701de08fefdda487bb3ee82d3583acdbfc6cb74614af879e3edaeb3f093de7d'),
-      (439, 0, 9, 23, 55, '0d8c9ed72e345c80a138e07972bd9184f6745926fbd6c0406145866ce1f3d034'),
-      (439, 3, 9, 23, 55, 'cdd7f8ec2475bec5d54931c7f3ec6419ab67cd27f6a0bcf4e1b0c2e1b380cf43'),
-      (439, 6, 9, 23, 55, 'af522f6271683b4a82bee1f522b1f66c93f5a54a99b0e4561a4bd9f89a76f8ff'),
-      (440, 0, 9, 24, 16, 'dd2ae60374932ea8924ec2f0bb4f05938d58b859f9e7994dfdd99a2cb89818c6'),
-      (440, 3, 9, 24, 16, '5f0d21451e73767d53b53db833b0d773ce5b9ad1d12320127e2b3f716ab7e80d'),
-      (440, 6, 9, 24, 16, '7f376e63689b213474d3e5bbddbeb23fef096086fe16eda441bea0d418425d72'),
-      (441, 0, 9, 25, 17, 'e621cc59a48049d835c0d191dd79706998ba7d0330cedf79c9f05ea6c664c663'),
-      (441, 3, 9, 25, 17, 'a12b00dade1534de3af7ac679b8534956443226ac267bba4a5466dda3a72ca22'),
-      (441, 6, 9, 25, 17, 'd95191683df1eea8e2a5773e04ae0a0fe5dc360c4bad52699d348e24d415de65'),
-      (442, 0, 9, 26, 18, '16c4c65dfc1982edbbb9dd4e22db3e5418dc979c396d266f70547cf6433fd4ab'),
-      (442, 3, 9, 26, 18, '61ba96cc68733ba7916c68dbe61df1e4acd3c0682e4609dbb25dd9c30e60ecee'),
-      (442, 6, 9, 26, 18, '14fb5b6f8d3a07d3297dd5d5e785a1bcf8ebfb34c3abb4cbec7c02811a9b3d58'),
-      (443, 0, 9, 27, 19, '8a6a6fce27594cadf91a619bfe15861f272f58b3660094efd585d11871f5ff5d'),
-      (443, 3, 9, 27, 19, '4fa2294d4e9a23b6d773131bea5ef3856c32281f9aef5d0d93bb1afb2f1956fa'),
-      (443, 6, 9, 27, 19, '062299a64181a10f419fa1954dc7a17fc71e5473e6f289753cf9a70abda0263e'),
-      (444, 0, 9, 28, 20, '626169b423c576383e13f62339e2918cec0751bc3cb79cc2cd744c871547664d'),
-      (444, 3, 9, 28, 20, '341db0a065d9509df83ee13b211d94b99f2377cef0403b0a6d472f5a9b3accaf'),
-      (444, 6, 9, 28, 20, '9efdb30496a04f8a86bf9b4583fd4a7463917614bfa3bd2e84c0ac1b277d63ee'),
-      (445, 0, 9, 29, 21, '0fdae589dcea0cd7fcbd5689729b92d9a1313c447c0425d0bc99d44ed412c47f'),
-      (445, 3, 9, 29, 21, '1185fc2df63ff37db9f26f69c68e1b72480cb864ec6ce94d26d9242c433f701e'),
-      (445, 6, 9, 29, 21, '6e4e61995703db009498044f81c460e1c3b107f76f06988408da351363c949ea'),
-      (446, 0, 9, 30, 22, 'ee3f02a6f9c59309388ebfee97e6282976b09596e64d84d132f1106c5ec09c35'),
-      (446, 3, 9, 30, 22, '0451a510b7d38bb2321818fb784bf6992fd5396063fdf85e427a456e240b10c0'),
-      (446, 6, 9, 30, 22, '1a69085b9f9ce3d5da5afc2dfc6ca966c53178b933d813d871b0e2f52ca75429'),
-      (447, 0, 9, 31, 23, 'e80d78aea5531da0c019ec4df0623eca63ab967775920c6d74c6957bb022d665'),
-      (447, 3, 9, 31, 23, '8e5a21a86c737bc8611cd693b704dc1fe0c59ee09dd97f3a663e9b0dd25de3b2'),
-      (447, 6, 9, 31, 23, '9a20c3ed5964c21c954c216d4b0a5a0a93da6dd69a2b2b54116c7fbdcedf5f70'),
-      (448, 0, 9, 32, 24, '4b80a9c0ceee833912b21d4521cc39f87e8144c96820a8fb3e4292aaef493d4f'),
-      (448, 3, 9, 32, 24, '3f06046ea8814b41b78146604572b3d2922adf2e593e640b2b97de57731d8e9a'),
-      (448, 6, 9, 32, 24, 'de2a7585d90de23253bfe5d05487195414fbc983745ce6e17da79437d6747860'),
-      (449, 0, 9, 33, 25, '3c5d031fd21f877123a6df8b6376833ca121582b92fd72e87a9481e022cbad12'),
-      (449, 3, 9, 33, 25, 'e85f4c93d087c209071932847fe835cd9e241776bba1dfb5a3bb7d67512ea4b7'),
-      (449, 6, 9, 33, 25, '4edca250ffe50c29d42f3a7e6dfb9df07d6a7a094ccec7017c8b05ce7cfd13b4'),
-      (450, 0, 9, 34, 26, '85124242095bb59169c700737247fb8171c8bfe27eb164b887fc3e92ab394c37'),
-      (450, 3, 9, 34, 26, '7acf5f8c6c04f4b7c1b301b59ffa48859a7e12487c2e33d3dc27b0756aabff66'),
-      (450, 6, 9, 34, 26, 'ecd9fd9824f63e056dfcfd1883ce823f87780bf5999dbe0720a2b918798e7fd1'),
-      (451, 0, 9, 35, 27, '552a613adad24ac973cd2504dd66cf7e9f0b26ae70eefdf865ba1175a12c6c8d'),
-      (451, 3, 9, 35, 27, 'c59a6f883797b584f37f3519d8cd7691dccca9eb0fe9e0ec9d2624315d9d66f6'),
-      (451, 6, 9, 35, 27, 'c7d28745c8e903ffb36c31ad3f2bbb88e147e4ddc8837df1f255df9d715c1d0c'),
-      (452, 0, 9, 36, 28, '5462828950e74d275bc9671ea8f7ed024468b7f498482a89afb2fae804fa3f99'),
-      (452, 3, 9, 36, 28, '19688b23ccdd250bc3f0d37d816d1f1891bd56b4b2a9c34d75810f664ae5fa66'),
-      (452, 6, 9, 36, 28, 'cca658cdb04b87855ee09857cc4169fd42e2ee6d902df4785873a4224d21cc7e'),
-      (453, 0, 9, 37, 29, '1e14408c7aa9c74a31801aea7c756a628c0a9f1a2bc545acbd952b10b6649692'),
-      (453, 3, 9, 37, 29, '1efebe8ef8ecee8c99cb7fc61d961fdbadbdebd33872d4083cb9f855bee64425'),
-      (453, 6, 9, 37, 29, '52197e8ae9ea8770a8008348266bd331b3d71bc7aadac8984d424a20a2da61d3'),
-      (454, 0, 9, 38, 30, '0f68c88ba384c722e4e442e7dcf600efbf669439ea5dcd93e62f3965b427f77d'),
-      (454, 3, 9, 38, 30, 'ca8069856120fd53ab93928060b945524e6a2a5380b511ceefa897a6f33ba162'),
-      (454, 6, 9, 38, 30, '798b9e87acacb59ea8fac99da9e3101e97ed9ffffb058a9ce8102c69765fd374'),
-      (455, 0, 9, 39, 31, 'e220d17fa2eab6206d38d02af5f2667b4d8a2560cc8ce973f18b2c8b3fc6595d'),
-      (455, 3, 9, 39, 31, 'aca121d8d3d360d0df00fe6f566766272cf00dbf3cd397e94dc58f58901ae0c0'),
-      (455, 6, 9, 39, 31, '5bd7551316acc9aeaf8ff2936cebfdf55f9c1c3ea1723a069a545d55449296eb'),
-      (456, 0, 9, 40, 32, '58b3806c7133d5626ebb9fbc6797002adcf7dcd4cea3d8fefc2ff8e70aaf9a46'),
-      (456, 3, 9, 40, 32, '43de8ca267748e64fd88511ae0239677af6408a42da245f710c7722cf2d51137'),
-      (456, 6, 9, 40, 32, '8b9b84420cc21af1a29c8efe4c70618b27dacdbec017931ff9b2c74990d1c6a1'),
-      (457, 0, 9, 41, 33, 'f41b5fda2e38e769808004fb7d35cd79dd0e904b5f9daad84afbed617ed25592'),
-      (457, 3, 9, 41, 33, '912be506f5c47b99a2275d04ac7c2702b9cc13db0acf1bb4a992312ac405160d'),
-      (457, 6, 9, 41, 33, '591e676784fc3f45e00600f7214c82da9d815bd10bc276aeb4b1785ec8b175d2'),
-      (458, 0, 9, 42, 34, '94e722b59f5a59f159d1a9f9f13be9ce8e4d2aa88ab01363443f8b197baae1ca'),
-      (458, 3, 9, 42, 34, 'ada5104fe470f805dd4cbd274fe14c4125c4417f1608e530fd792d6efb93a5b3'),
-      (458, 6, 9, 42, 34, '2d15ef93d716360a174860693ffc1c571687e21ff224013eeeabbe43929e970a'),
-      (459, 0, 9, 43, 35, '7df74d6bf2913999b1b2a62f7cbab368648921dd9fee750c3a2ff281f88a737d'),
-      (459, 3, 9, 43, 35, 'c360dcabcf27c605aef06a2bf72cab243d8b34ff49b7642f5435d688a714bd54'),
-      (459, 6, 9, 43, 35, 'caac45c6a0f38b8e9feee5c46746b6fb6be11ec38a812526d4e20476c2601e70'),
-      (460, 0, 9, 44, 36, 'cf6da6dadd9610dd8191a042525f891d2b9599412910be27718770d7d158d675'),
-      (460, 3, 9, 44, 36, '770dd214e58abc2dfdcd419d8435553503e32c955073500fccc45b3d7d40568e'),
-      (460, 6, 9, 44, 36, '2ffa3d8a07bc6bbb3a69c7ceb53074f369ff092592eacfe81b08b14ae2de874e'),
-      (461, 0, 9, 45, 37, '384cb527946795d42cccaadae3dbd3cd8525962230245d946272ba2340a03a06'),
-      (461, 3, 9, 45, 37, '2774c5c3cf070bbe6239704b3c90773ffae86479398cd27544a8181f447b9e1b'),
-      (461, 6, 9, 45, 37, '95d997b3351558cc193d18c927bc6a467ea7d2832c86acceb3809218a99a0609'),
-      (462, 0, 9, 46, 38, '9c7dec88e7f5c4746280fa1a1a379bc125fb7cea3092027573c225ecf9c7a9b1'),
-      (462, 3, 9, 46, 38, '047a30acea1a8db63208a04f57e7194fe1fe5170448f9dbff8e0e1405e1a6fe0'),
-      (462, 6, 9, 46, 38, '29750ce1ec51189d8bf521f696ee6d9668e02a1ad6f58f0fbcf3ef07f61654ed'),
-      (463, 0, 9, 47, 39, '3b15ef06ed77133748ddc5adc0839a9b0349387b04472f8581bbbdd5df64fde3'),
-      (463, 3, 9, 47, 39, 'f46b32c863e17513ed59e0a9bd46fae42b13866e1da1c819598e827f3ec952be'),
-      (463, 6, 9, 47, 39, 'ac41f4fd421de9fd7454c338f4cd607cc33a398986fa0edf1a860fd91183a85b'),
-      (464, 0, 9, 48, 40, 'c6b0f63595d4420ab74a0f57c107025e6c228277045146e681b26a6306f5a62c'),
-      (464, 3, 9, 48, 40, 'd8d6ceced767f38c51d71489967757a346097d7558fcbf1943bcae9bcf0ca4b8'),
-      (464, 6, 9, 48, 40, '8beb88385bd1ee0a0f2606304c3035661a63e2864c6528540b28176770ed5356'),
-      (465, 0, 9, 49, 41, '5c8dc49bbb8fc7b263c79a23e7ff725c0abaf138aff748792bd76403422bcd48'),
-      (465, 3, 9, 49, 41, '9026ea4a9f0c2b05420f936be07184478a03ef4fed39e6602727aac57a5beac7'),
-      (465, 6, 9, 49, 41, '372df08777358c6c863e0e543065d7c85b0e96683b4aa93f880c70da34e4ec1c'),
-      (466, 0, 9, 50, 42, '6b834f04cc5fbc0361c75261c63e00f81fae41275e1dc9c46f0394b25cf4c10b'),
-      (466, 3, 9, 50, 42, 'ad58328e596e6bb3546d48c917b0978ea99d2957f114bed9367c95bfe246ed81'),
-      (466, 6, 9, 50, 42, '115102301828fa7e25bbf2e92a56c308e22e2c41bcb674e65809ea9a832e0eeb'),
-      (467, 0, 9, 51, 43, '564bfbaa5c00876c064c0b31b9ccec1d8082c65cef2cfa20d1d8dee57cf1b205'),
-      (467, 3, 9, 51, 43, 'd7e1d342c60985e7edba445f4937280f5d5c5310c3db042ec644ce554b8a0d32'),
-      (467, 6, 9, 51, 43, '3e00a60e13311b6f403c79f04dc9294dff6c0652cb125bca5930eb95beffae95'),
-      (468, 0, 9, 52, 44, '9d6a3b67a87354064a75cb916b1ef04a5996f8ec0c69810f1c2ac42caa7d9db9'),
-      (468, 3, 9, 52, 44, '2751f0ce6f2261957cde6ffa18247ead464011b6c497bcd0e74a73b59ee13492'),
-      (468, 6, 9, 52, 44, '2616581d8eb9c724e8b9f8160e4d7b8179a452e0339d226aa43f34ae1c2b8760'),
-      (469, 0, 9, 53, 45, '6d5f73e86cf42990296d8afc083dc7b06dc6c34b36341410901c2479c61fb6ed'),
-      (469, 3, 9, 53, 45, 'a16842a2f0d3cc06771d0f80dc78da40b73d8b396ecc7d3f208999b5c99fdeba'),
-      (469, 6, 9, 53, 45, '27362542baa014308ec8d1b92e8a473cd68308933c39fab8edab587a5fe6df47'),
-      (470, 0, 9, 54, 46, '000649c18eb0dbbeb65bfc75859734937592c0cafa70ae93773487d4b41d0f6e'),
-      (470, 3, 9, 54, 46, '8fe265d76af9b9873fb18ac9c93d6bbe0983e1827b82d7fea782fce26ea59829'),
-      (470, 6, 9, 54, 46, '9c135f3270a390f0cb78ecebbb504cb1a4c11d9d3bdcc024280023ddb574cdcb'),
-      (471, 0, 9, 55, 47, '48bf9e055aa1838f2125b557fbcd8ae06f6beda7ef1ff1a57b3a74705ec87ffe'),
-      (471, 3, 9, 55, 47, '47a909d9cb69dff56e45cc72818149719881ff98a134a1e9d25d31e7afd83342'),
-      (471, 6, 9, 55, 47, '435092954e82cc9317dd02722d5d7b6602bd7848fd72364099a845b8fcf9d7cf'),
-      (472, 0, 9, 56, 48, '9ca7678e5dd78e555c1da2b3e42f3933e7650a412f378e47a84560c5ddeb5183'),
-      (472, 3, 9, 56, 48, '2d840dbe32d6b6c4a088ef8fb9dbc01907dfc34368383a3f9a6100474fb1e744'),
-      (472, 6, 9, 56, 48, '2499a30ae6d7d85f01d6793e11f5eadbd28058d2104a2e40b4231034863db45d'),
-      (473, 0, 9, 57, 49, '4afa6e943bf8b5a3f8ea5622000cc4f6c41564bf3a940dc0e5309fda0b44957b'),
-      (473, 3, 9, 57, 49, '2b9817fdd216efee5cda37cbc1ba197fba868725fb902ddd5dcd7ded7739bc7f'),
-      (473, 6, 9, 57, 49, 'dfe47642dd6160d7eed10498d5b1791be90947419e86a1e0f57552c575ce53ef'),
-      (474, 0, 9, 58, 50, 'bda264baa7126ad97cff34cfa2d6e1bdadc293c9b92113ee5d89378e2bc30533'),
-      (474, 3, 9, 58, 50, '3fb1a678a71eae2f46786a20bf4f991e15e295a458cee236806cd74bfb2b5969'),
-      (474, 6, 9, 58, 50, '590f8a222e555a8fdb8122992b06d4523c2fd7b13ef8320d02c2a7491b710081'),
-      (475, 0, 9, 59, 51, 'ff3849a090d5c46f90603f23295a43184e0d3fa5e57c397a4e2f79cf965c10ed'),
-      (475, 3, 9, 59, 51, '408b8337a05b27c80a7669636a55be5f03be46ab37d3afaf96f9e1e6f1be2799'),
-      (475, 6, 9, 59, 51, '5257144d7e3c51927b4d4294842d2464cc84fd3add87eeca3fa4433ad3aea65a'),
-      (476, 0, 9, 60, 52, 'dd06e20d2943d3e3b6d66f610f3920dad9f3c991bcab3378f9b831b5130a9b88'),
-      (476, 3, 9, 60, 52, '7b40287fdfeede9c714617830b9669a367b1d1dc4aaedcdd9b093d6f0485ddfd'),
-      (476, 6, 9, 60, 52, '99272dd3f81970d37bcf513798b185e8814bf7aaa85d424e141763c0d56b9308'),
-      (477, 0, 9, 61, 53, '5391a84161c686442b855de69fbfad4e3fa6d73c35c7ef6643d341326bb2fab7'),
-      (477, 3, 9, 61, 53, 'cc7b054b32594152e84678c3888af62977e5069b371fa32e70a744f268cbbb0a'),
-      (477, 6, 9, 61, 53, 'f841c03bf5f4bde1a1ea1eb8590296cc0f351d50429a9b53ece3846f572d4028'),
-      (478, 0, 9, 62, 54, '6b9daf4919308f779c4bc609711d2c16497ef3df03e097a07bcc76e66cf79710'),
-      (478, 3, 9, 62, 54, '3ecd6be68fcf2c8dc46c2f37816e9dccde8e3bcf02b0ad33b09087dc965ce5c8'),
-      (478, 6, 9, 62, 54, '5fa37f9dd8420d484b6ffab0b92a44d2dd09a5c31777825a81a3aa7c0bc75567'),
-      (479, 0, 9, 63, 55, 'f90316a1360afe18f1f9eb35a8da6e8009f734170088514d9e526c20e2ba1ea4'),
-      (479, 3, 9, 63, 55, '61e51e3e80f16da1e5c724137aa52a7b983c721dd1d9f4fb502aadf956b1d338'),
-      (479, 6, 9, 63, 55, '54dd1a09088fa043c42f23d8a71af4b984e6e3f6c73a1250a36c52113303096f'),
-      (480, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (480, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (480, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (481, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (481, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (481, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (482, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (482, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (482, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (483, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (483, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (483, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (484, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (484, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (484, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (485, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (485, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (485, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (486, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (486, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (486, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (487, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (487, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (487, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (488, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (488, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (488, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (489, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (489, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (489, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (490, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (490, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (490, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (491, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (491, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (491, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (492, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (492, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (492, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (493, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (493, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (493, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (494, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (494, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (494, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (495, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (495, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (495, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (496, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (496, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (496, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (497, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (497, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (497, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (498, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (498, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (498, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (499, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (499, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (499, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-    ],
-    149174: [
-      (0, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (0, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (0, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (1, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (1, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (1, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (2, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (2, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (2, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (3, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (3, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (3, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (4, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (4, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (4, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (5, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (5, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (5, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (6, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (6, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (6, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (7, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (7, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (7, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (8, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (8, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (8, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (9, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (9, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (9, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (10, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (10, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (10, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (11, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (11, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (11, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (12, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (12, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (12, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (13, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (13, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (13, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (14, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (14, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (14, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (15, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (15, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (15, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (16, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (16, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (16, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (17, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (17, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (17, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (18, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (18, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (18, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (19, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (19, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (19, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-      (20, 0, 9, 36, 36, '8e2267d9d5b3887b3155ac1c3ea2f23f34ef2072b48e7ea2a0e2d826699767e1'),
-      (20, 3, 9, 36, 36, '432f1b390e55ce9e52fde23ef3fac4deb7394d7746e84bb34b7a7fb14b40ae80'),
-      (20, 6, 9, 36, 36, '39b419cf935494540e712c2622589962f429f793305e8f1e9b6cc92a28b89701'),
-      (21, 0, 9, 37, 37, 'bef64838d49ccada5c0b459946c321cd91b0d897895270bab0e69bfe0a1c4186'),
-      (21, 3, 9, 37, 37, '241c1b8b05fbfa04d04ca702ef9491ba58d0f3b4dff52734abe5ef94cd9b9636'),
-      (21, 6, 9, 37, 37, '09fba7228703b4160dd29da3ce6a4715ff93a9c0003b670d550cb73baf034701'),
-      (22, 0, 9, 38, 38, '932db3e008ec4488ce17287f81170a7862796c650dc271cae7b0f70261dfa27d'),
-      (22, 3, 9, 38, 38, '33740f21df6eac2624d9e188ca5356ef20cee44befb496fbbb2ff0a3fe28e0aa'),
-      (22, 6, 9, 38, 38, 'cf86939424e249d6d07439c7fb5c996d689ae057b644d93c8b51dc59058774ff'),
-      (23, 0, 9, 39, 39, 'c2ce2172256dcee2e4c13d86684c37b9d633ea43599b80ee81d4a6019ffd5e80'),
-      (23, 3, 9, 39, 39, 'cba1c95fc94d5f06eb313e51bcdc6b9ab1548bf551d41b2480332795de8d2adb'),
-      (23, 6, 9, 39, 39, '7985683d280f5b4a6bb910f562537a093498bc76a447c0370dabcc5d8e3dfa3c'),
-      (24, 0, 9, 40, 40, 'ff657e41afc635ff08e0a4abab525368043258df941e1d2ed25b482b096e7824'),
-      (24, 3, 9, 40, 40, '761c108367f657b8089192b9a22176fd36d287c590d6a8b437880243809e0d90'),
-      (24, 6, 9, 40, 40, '7bd196b5358ead0a4538348c04a26344c35fadc8c083a6f86ac6d6c0a4ab8c3e'),
-      (25, 0, 9, 41, 41, 'a24bb88ed1a55a5eb96dabaa64525de563901413639d240e6151c9eedbcf231e'),
-      (25, 3, 9, 41, 41, 'c588f878a531db49cf9ea0e87876003a55452529365538955d3ab42782be47b2'),
-      (25, 6, 9, 41, 41, '1a821f7233989043862206aa25bd30504a8dde18a20032e24493a657eb2ae036'),
-      (26, 0, 9, 42, 42, 'd02923e877543df074b5efdf26a5b8065101abd185d5916d59c6a67e54a7177b'),
-      (26, 3, 9, 42, 42, '84a50ba70c76060f329e1b22071ddecc8803f7ab083bd899c5c96218ab0c93f2'),
-      (26, 6, 9, 42, 42, '1a6b741e8e1846f896fee954e422b48c30639cb0c050e50337b8e646f457e8b3'),
-      (27, 0, 9, 43, 43, '2c701d56941329b13669a9d35fcf15aca518194cf8c9bf23be10ea1fac68da93'),
-      (27, 3, 9, 43, 43, 'd1dde2f7cb06e0b1eac1c0a0fd44edbf50ab53cf2bdd94e97aede3c0e7ae5ca2'),
-      (27, 6, 9, 43, 43, '194bb921b71faf4154cc3145afc1652ee1f5cbb5271b59bf36a44c18954bd51e'),
-      (28, 0, 9, 44, 44, '157387272447ffa6bd4dffe247f0a8ed6cced1afefbe294e9759207dfa928edd'),
-      (28, 3, 9, 44, 44, '6032306c5855632d26d21d5e523146db323d322d52ad96ad13b815529cd55906'),
-      (28, 6, 9, 44, 44, '1e58ef598b916f1092d2a576204324d9628736711610d4d8b28faa69a398565b'),
-      (29, 0, 9, 45, 45, '8ef00e70eec04188432ee3cdf06aaf5f8a70b67d746d723e779e37cf255e7e57'),
-      (29, 3, 9, 45, 45, '47beb753ca5d22996f2613d216851657dbd32346eb8b8ecfde77ba2a3e475305'),
-      (29, 6, 9, 45, 45, '03721557b78b5fa383d9c81488ab24b7d033bd1b53537ff6ae9de9a487ee23e0'),
-      (30, 0, 9, 46, 46, '1a503cf36668310c171d3b1908e16af2c79525648d470c3247d49286fa13c474'),
-      (30, 3, 9, 46, 46, 'bf86ce3aaba71a7d0e823339d11d52e5db6adfa69c00c5896eafe9a5cd73efdc'),
-      (30, 6, 9, 46, 46, 'a38f000d6474d7208c6a5c0ac176a4b9173c9b8759a42f748ad1dbaafc48ddf2'),
-      (31, 0, 9, 47, 47, 'e01c89ddf285a808cc59dd30341979021e680880c09128e56646893853f8c8a4'),
-      (31, 3, 9, 47, 47, '08f7f319765523f1f252f09c4922d7b5f4ab489430167fa3a1670511fa1c12f5'),
-      (31, 6, 9, 47, 47, 'acf788970d3826a2e336da1830c3cb3f47bb8bac47549f9b3117cf2fac70496b'),
-      (32, 0, 9, 48, 48, 'd93da555eaaa95d22d99ac77e1940624cfb87dccbd77c719d4068ff71c6a9782'),
-      (32, 3, 9, 48, 48, '957078a4fe289fe09f3fa9e029d1f3b8e0208bd91719f02efd9309b7d0cbc416'),
-      (32, 6, 9, 48, 48, '03384c23f91a22d72bd94aaf4248f2403f50ba91d87e947ed3666567f488b81e'),
-      (33, 0, 9, 49, 49, '539a2fccef6a006d4f517540d56793e9be1341e8dd53341ed41913342e849d1a'),
-      (33, 3, 9, 49, 49, 'a82f9b8d65fec085550f13f943c37066e8b72acd26315964a86c58bebe5a5857'),
-      (33, 6, 9, 49, 49, 'cb96c5e3e5b63b442382f3c877dc48348a7bec99a68335dffc065ca75007cfd7'),
-      (34, 0, 9, 50, 50, '34d6781cf6e48453714e57f44273cea8073587187cbfa582df2772fd4b05b0ab'),
-      (34, 3, 9, 50, 50, '463b64415db029d7e867b9737f8f9dd1dc652abe7c304ac64d5729246c476873'),
-      (34, 6, 9, 50, 50, '12a31686a0dfe8c4eb3e3c63c791513289192576981c081066ac8bdcbe711d37'),
-      (35, 0, 9, 51, 51, 'af5d49e6e42328128857a3cb3b064c14ffaf680b2ddc27243719988f6cf970e2'),
-      (35, 3, 9, 51, 51, 'e2dd68fb3381d341bee0fa68583b558387027067ef9f83bb8cbc6d0dcb01ff7a'),
-      (35, 6, 9, 51, 51, 'd1aa44c84feea301ddfcaaaca1f6b381870bf6b6fadef66b3eb6bb1eb3e8a540'),
-      (36, 0, 9, 52, 52, '1eb2e7bc51fd9dfb1ea02c1675f784efa7087855c1f791fd4bd92d99aa2f99a5'),
-      (36, 3, 9, 52, 52, '23026a91ce87e0f535091463b23cd61ce28ff13ebf0c0bbdfdf77cd30c2870d9'),
-      (36, 6, 9, 52, 52, '5a8d6e7eb10c094ec82bc6b1e7ccf4b35f0443a6c2cd39bbe79103869999505f'),
-      (37, 0, 9, 53, 53, 'a7db595a870b83d019aefa8bf1f01f20337b958339196e91e7c2c75ae51f65ec'),
-      (37, 3, 9, 53, 53, 'bc08b1743c518314df8c9fda918f9ea908fe9afb45910dcc51222a1ccffd6e66'),
-      (37, 6, 9, 53, 53, '1056d0defff8c1ad62c6444c15a6887fc7fd388c807a8e2b1870ad7542c68b09'),
-      (38, 0, 9, 54, 54, '2afa136a26802e24f52b6f99fc0d9636ffd4e07a2c360def977954cdfeaae085'),
-      (38, 3, 9, 54, 54, '24a1f9c8c571c1d034b5a5e0925ccefdcc0bf291b51da8179e8dbd55767b0750'),
-      (38, 6, 9, 54, 54, 'bd0a89ed8e89b12f8a6d0715b2680cd54f41bbe63af38f6974df40bfe7a1546e'),
-      (39, 0, 9, 55, 55, 'c089c997ea965416b0fda611986b9032fc64d0078e2e7a63ab02070ed4d4e06e'),
-      (39, 3, 9, 55, 55, '232dbf89d0e92fec24a30c84cedf3313b8e8c451f22104c11a1c4377e571771c'),
-      (39, 6, 9, 55, 55, '2628bccfc229f0b8b998c5b4a0321f83c6f62d31785d21bddf4256f7e851c7ea'),
-      (40, 0, 9, 56, 16, 'b376679df70fc00756fc58803d1182a2433e3d48dca46271be119e682a843661'),
-      (40, 3, 9, 56, 16, '4d543005d7875e425292ab3a03a1cbd3716628ce1219913a423f6950673685d0'),
-      (40, 6, 9, 56, 16, 'b0c6e0033f1f2eb09f7017c7bef99d3905094878d51af055bd72a05e91f84771'),
-      (41, 0, 9, 57, 17, '8dbdb21b6a2067abed2697673eb4048d44ec0ac7eaf1e7972265e7718c2461c7'),
-      (41, 3, 9, 57, 17, '9dadbce8af6f63dc28c75eb5e8f70b0973a891a715b3e3ca9265cee2ec1119ec'),
-      (41, 6, 9, 57, 17, '5c37df3c677e90e8e4b8ad760e7a9d7122e49e5f8403b2b369e2c331a15bedfb'),
-      (42, 0, 9, 58, 18, '2088f95afb21412ce9b2c985617aaaea649044d5562ac6752df8770d3c76134d'),
-      (42, 3, 9, 58, 18, 'd110b9607622a23592b492b42e0ccebd9328b25914e4f61480a088dfd8473d7a'),
-      (42, 6, 9, 58, 18, '331ee14ea9e707bc7de301bcfa7368e21fe45aaaae3ace7c7532086dac16f80a'),
-      (43, 0, 9, 59, 19, 'e84e34dc4b0f15c87307052d7aa48d70a851cfa796e8801cbc2c4d576cad97e9'),
-      (43, 3, 9, 59, 19, 'dbc3a5cb51ab019ba1ec9dd841bc5584c5ffdbf99373f187e0386694680dff96'),
-      (43, 6, 9, 59, 19, 'aa1a6c4ee7805d4fb8bfb8723e715a1679c26189043dc0de91a3432b97274e0c'),
-      (44, 0, 9, 60, 20, 'aa3cda610485f81e633e41b84f8b108da189337596527d7e82b65144132e311c'),
-      (44, 3, 9, 60, 20, '0b249ef8a0a61392989855f01aada4462728d4cdc34147165767a1a2b66d4d38'),
-      (44, 6, 9, 60, 20, 'f023a645b65fc073fddad85eb2a7fdb011b49acb4e00f69c1d4a7cace4b6e809'),
-      (45, 0, 9, 61, 21, 'faccdb6c764dd6e266bd72bacb2fb3443f8b79dbc220513d13c914da52d79cfc'),
-      (45, 3, 9, 61, 21, 'b7e9bb82ffbdba377a7d80d6d50c2b245134028581e8788ff73cf6673398c903'),
-      (45, 6, 9, 61, 21, '535d009cf1eb24cd490dc0b9372b61653ced07f533cb4d0aacb0badf6a182ec7'),
-      (46, 0, 9, 62, 22, '6fe1806e79856aad39ff3a3ec3da326f3ed3f76013d34d7078763f44d62593f5'),
-      (46, 3, 9, 62, 22, '61fce86c9ee6f09b00a6970e9ce448658aa4efc70d9dc52b69e214fb11803983'),
-      (46, 6, 9, 62, 22, '9154d0d1abe116a73cf1ce17f90261f32a4ee82b47f1bfa0968c394b8de314cf'),
-      (47, 0, 9, 63, 23, '7af875c080872235b2f205194d12085ea60120beae0c46e90a78aabb2611da97'),
-      (47, 3, 9, 63, 23, 'c8dc468cb50f3c5c32299b5ecf5ac7857b3e80b712dc5545a1b896681be505e0'),
-      (47, 6, 9, 63, 23, '0b883d0b25e89f03d7a899473a8a663fe54fccd66ff0220c2f88c8328fead8e6'),
-      (48, 0, 9, 16, 24, 'fa7613f84cde3ebc469a327e00ae772a647f3e6c0237e368e1d7e42cb3f67c3a'),
-      (48, 3, 9, 16, 24, 'bdbc57a5a5ec359cf039e38c83adfed0f84dd6b0dc365d29b24d8458b88ecf4c'),
-      (48, 6, 9, 16, 24, '551dd18d551dac9be38b64395d45c5f7c7b3d1f1845097623fbaaa32c6a25f17'),
-      (49, 0, 9, 17, 25, '5abdd05bcd748098c718c61b74ffca55333bc9eee7b0b2c86a3e3ca05a29942c'),
-      (49, 3, 9, 17, 25, '0a515ea12cc55129593e6b7c30ccc3007373568db556c065e7f4987e94ea4876'),
-      (49, 6, 9, 17, 25, '435bd382ddc22bdc3ba6761c69bb52dd92939dbe748e41947228cdaf5e805b53'),
-      (50, 0, 9, 18, 26, '96119b1e8840431f42dd80a1d129f9a79ed0bfde6665f41103b569c15915d38a'),
-      (50, 3, 9, 18, 26, '1ec0b9fec820dd6fbd77d825f9071bc8a1a793f2c714a7b539f8dd3e2aaab462'),
-      (50, 6, 9, 18, 26, 'b0ae413da840ed115d4339db976ce9234b1c570a074d56ffb2a3a2cf2f036fa0'),
-      (51, 0, 9, 19, 27, '6adf155578c74ab47ebb50eaa9011dc017a6137c27ef5f987072d9c3012b9994'),
-      (51, 3, 9, 19, 27, '910e3f298620d5a8ded66f57032b78f4dd0a202b63578f44a72a9d2d67bf6190'),
-      (51, 6, 9, 19, 27, '3db85052a1f54481fea8cbacd6713b18702ebed1d20e96b22581133e49361b20'),
-      (52, 0, 9, 20, 28, '158218014d9bc35b565f0beeb974d059a49c86d31dd24d913d68ad4068fabe7c'),
-      (52, 3, 9, 20, 28, '08473f986441151a57de1e006b02b414d740a3d3ccc4a27999473f11491a3df1'),
-      (52, 6, 9, 20, 28, '10feec623acf88e22a0a8af7ccc1e7d21438c8f2f710c9871da12055a9ec65e2'),
-      (53, 0, 9, 21, 29, '7285a406223a2da3dc6452830c784aaf381c2bef887f1196044cbfb06e0f732a'),
-      (53, 3, 9, 21, 29, '3c3069bfea3f89c3b74150b0de54390cd514378eedefa8b07833671224df9256'),
-      (53, 6, 9, 21, 29, 'fa71f023cdffb2acd89235125df9a67c0914a96a71b44aa465eb6fc910451f59'),
-      (54, 0, 9, 22, 30, '5b394734dc67f65463477f9b02eebe1671a68ec7b2e55f544156c8e46507ae3a'),
-      (54, 3, 9, 22, 30, '519e294008074f9ad42dc74bff6ab7d6588b6fe46c2c8fd3a34e203a63b2a4d1'),
-      (54, 6, 9, 22, 30, '16f4ba5e3fd30dd411293cb1c15b6e2e186e635d8f9500296a894690bf879934'),
-      (55, 0, 9, 23, 31, '1228f32113a078f587e18326bc8b8409ab1abc73562c13931d0d3767ba77145b'),
-      (55, 3, 9, 23, 31, '3bc7bfd72caba3ce4b90d8d8c22b115871cc4c8316e40d111f88bf9531c48007'),
-      (55, 6, 9, 23, 31, '9b46b7204bbd0c878e892518cdee8fc9c4055b98219dd2fe9147f68068f66034'),
-      (56, 0, 9, 24, 32, '0bed753309d414baf564eda241fa1627575927c7efe92552f3fb9956a4297649'),
-      (56, 3, 9, 24, 32, 'e6ec2966f5cf0fcfe201f5762dbdcf2c4ec3e3dc2ca2e70d7665e295e069c1b6'),
-      (56, 6, 9, 24, 32, '04be33115728d25d8b89ae08c6073a6043c14e79a83b9596b08efad545f71f31'),
-      (57, 0, 9, 25, 33, '9fa91f3fce7341843e48ceace516bd08da710e7cf5074fcfe51f12377db13438'),
-      (57, 3, 9, 25, 33, 'd9b271d5a067594a6dfc1170e1a60c9aa5bd473e2982333b7bc26980724bc377'),
-      (57, 6, 9, 25, 33, 'eac2961ea609f2e6eafe50368faeb46d2da765fc609edfba69278b2c03f59bec'),
-      (58, 0, 9, 26, 34, '5e96039dcfc56f38422a36c03cfb810642de6df810825ec6e358e88ab0e8cd2b'),
-      (58, 3, 9, 26, 34, 'd35bcbee9d2fc86f3f2e290e0bf5d6deeaef42f9adf25713239cc5c4ea4bf394'),
-      (58, 6, 9, 26, 34, '1bab0d37e7f0098941e372ef4a45d413e7cfa8cc01760cd3c38ad7a57edda867'),
-      (59, 0, 9, 27, 35, 'ca9800db715e24bad76ffcfa973242dd0b9eb7d73b51f1faceb69c412a0c5e4f'),
-      (59, 3, 9, 27, 35, '9ff75062bbca0570cb8e72ac45332ab80e71ede5d964b67a784ef73e9c90b392'),
-      (59, 6, 9, 27, 35, '8265c450c7daff3c1e9778d11a048190222975ccb6129a0783feec0f2fa54174'),
-      (60, 0, 9, 28, 36, 'a721509c60a5a76bbbc11ceb92823f21b2b9f5fd000d18c602f715221b903ef9'),
-      (60, 3, 9, 28, 36, 'dcbd9ca2e1781415b9ec5788e690863dea5612664beaff3389e5e1d892f4890f'),
-      (60, 6, 9, 28, 36, '3fb5156ccd5583ad79c81cdab97382c2c899e4ae2039083f67c302e5315aac24'),
-      (61, 0, 9, 29, 37, '9a2a7d7b54434c1d86c9efde7c86fbcc29a4e3d0d19d1cdb3c836347871022cc'),
-      (61, 3, 9, 29, 37, '557249e1ead2188dff8329ae26849535dc10c872ddb651cfab353c18cb5af861'),
-      (61, 6, 9, 29, 37, 'c54227ad4c58c39eac0572bf59d3a8b514b63ba4402bf71ec9e694607f8b9863'),
-      (62, 0, 9, 30, 38, '4ff3e54d4aa752cfd3e6a06dad92c426134708b684b1104ffce983f893a92a96'),
-      (62, 3, 9, 30, 38, '2b59123ef34cc7b768662a4dfb039c8500a6accadd58434fb8fca082b6ac2e20'),
-      (62, 6, 9, 30, 38, '6245c6d5ec6c392fdaba7c4e19e4f5c278d72be9329137fd56724ea22e98c203'),
-      (63, 0, 9, 31, 39, '23cbe3b187375fc3d87f8e548fae99c6badebe003507437099d575f75cd114ba'),
-      (63, 3, 9, 31, 39, '4ae5f7b939a9a9156c3b42494f32aa3b127228c5eac6e2a804b189cb25a02b56'),
-      (63, 6, 9, 31, 39, 'af803631fc1cde9efa98cbf705afc2401f5762407a2300737558885d748e315a'),
-      (64, 0, 9, 32, 40, '1750967e9c5a103616d7403621019ae76be133a01c1dd6e05d511f80e7fbc43b'),
-      (64, 3, 9, 32, 40, '1869a6de2f4a0514bfd241989aaf2e2489aaeab26229e467ecc3af353ab0e296'),
-      (64, 6, 9, 32, 40, '4b3a8f5b5b90bf596267168561aa67b7429390fc1fdf256ecce0f8101c5d1c05'),
-      (65, 0, 9, 33, 41, '86b9a854c26d65d8654ad4bdf99e3af46736cfd2aa52f31441600863e48990dc'),
-      (65, 3, 9, 33, 41, '68e6a246a467baf89b5b52ba998b1292e42f4388825e3ad9c492fe31b83f0646'),
-      (65, 6, 9, 33, 41, 'fb2389d1698d4971c1d05d5c4bcdf88489b9836f60107ccba830c8509c0cab8f'),
-      (66, 0, 9, 34, 42, '55a4a359e245c8ccbc9c3772073270ff80c0829cc453ba359c3ac62bacd47fe7'),
-      (66, 3, 9, 34, 42, 'b1af01c8b3fad6f922583311a6611fec0d4900bece3776823174ba33b6d15bfa'),
-      (66, 6, 9, 34, 42, 'c32cb8b4b586513d2c4e25b007bc16a85931b665b2bb3ab723c7a6f78290bd21'),
-      (67, 0, 9, 35, 43, 'a9e9f34f84af6a9cea23e5a4e310b41452200a621904f3c45cd3ec9ec6c2a07e'),
-      (67, 3, 9, 35, 43, '39f36f3bbad047e2d06a68dc681ac6cae46dac9b18ebf8c7a76e663150faf64c'),
-      (67, 6, 9, 35, 43, '06bc29c869a670058d994e6f0ed24ab5f98cdf3a3ca35d78cf9424170f16e179'),
-      (68, 0, 9, 36, 44, 'ed7b3a76d5d4447aee2fd7e5f638ffdfe172c0acbc7534a07a6a5c93d972de31'),
-      (68, 3, 9, 36, 44, 'ad14d7cf62a608b0e3d5e8a8ef5335c202a66f1c21d6a232879d44138cad3a97'),
-      (68, 6, 9, 36, 44, '6bc089f90d6103029d4ae2b126ef8476c274963a31408b6b93339a1ef54e2a9f'),
-      (69, 0, 9, 37, 45, '631293f717c19489de28ce1175cbca7a0fb9abf3c09bb81ef183233c11b26cdf'),
-      (69, 3, 9, 37, 45, 'c975fe95a7bfd2f74c875d837734ed3667f39b1300ce1aafa5057e60f8a0d88b'),
-      (69, 6, 9, 37, 45, '9c6f116cbe663819ab933cb56929febe0abaf7162f829cb775afd2f81843d071'),
-      (70, 0, 9, 38, 46, '5527ae914e2126800cc79f48aa56d9c76d2ddb552fcfb3ae66ebd0ca51987d36'),
-      (70, 3, 9, 38, 46, '8ea93bb7643fafec8cdd413bed5bb4dbd93e82aad39bbfed57cfbf600e192d8d'),
-      (70, 6, 9, 38, 46, '95815902def3109dec348d5c3f555e892ea3e582ef76cc32536bb1ff3ae7d4e5'),
-      (71, 0, 9, 39, 47, '6b1cfbcfa532f8898f2d99d3d38aaee417d58821cb2ee92f26ff227c89d58098'),
-      (71, 3, 9, 39, 47, 'e59862b0e0a0919b461b8e5c8ed9f92a8eb31bf02b85bef3e16ad8dd0bd54708'),
-      (71, 6, 9, 39, 47, '4153c2d5395c62374155b9b909c74ae11b55032828aac63b829b41dcff9af35f'),
-      (72, 0, 9, 40, 48, '7a3741d4252b0c352794df060203a360ddadc1fb363dbdb720a9efe2906105b0'),
-      (72, 3, 9, 40, 48, '0a4441d6c8e8601e606cc0454e7600f31f7a64632bf5e44219be212738a37d5d'),
-      (72, 6, 9, 40, 48, '6805870ac7e60a876631532cc7bce5982c74134d1c8af3da7e58782852d2a4e9'),
-      (73, 0, 9, 41, 49, '1d477fa13cd4bd445fd3cc38c991a0734855f73a6d7f3e519f74a8ece74417b0'),
-      (73, 3, 9, 41, 49, 'f6154934c8b1f716d6515a21f04263672290f3e3f9dcb7bea1d9a4ee2e50bb88'),
-      (73, 6, 9, 41, 49, '230f130df28fd8b3e99d71cfac09f75c0e7a9c50fe58111d08c856220b44302e'),
-      (74, 0, 9, 42, 50, '6ee3f1907452b3fb351a67e03f0f26467ee9092bc863bbf7dc2b6d51ad22156e'),
-      (74, 3, 9, 42, 50, '36405d492e6ae0b4d51d9f37fb0808c123847ac16fc00a8ec93e90e5592d9c38'),
-      (74, 6, 9, 42, 50, '2feda3a79b8f5af2ff3c02b2c4ece79259e3d2c2c4dc764bdd30adafb7519a33'),
-      (75, 0, 9, 43, 51, '4534838c832844fe65fd20a583cb1240d39c5969ed1b63ec6fc30b5dafaf973b'),
-      (75, 3, 9, 43, 51, '44f50763ee5d47b7bca02d7b94d01fa6c35ecc9d4e56df299cb9a9c265e191e0'),
-      (75, 6, 9, 43, 51, 'd3a61c9691cf1c18c7fd662cc2f18238996700fff7d0edcfebaa700cd6618de3'),
-      (76, 0, 9, 44, 52, '39e908402c9f8c5781fb47469d1bf746c14d704786a0825fb3d4c46271a08684'),
-      (76, 3, 9, 44, 52, '38f871d78fe138bd2b9304d7b5362125a930d5afb85a37a2bbf38f19d12832b2'),
-      (76, 6, 9, 44, 52, '01eb702da8e48cedf2a8a861b3beb6144df28ded2bfc71774543428f56721cef'),
-      (77, 0, 9, 45, 53, '9d91d3a1120fc0c7da8b222f566ccd0ecafd3dc16f662b72c204c776b2f5f358'),
-      (77, 3, 9, 45, 53, '8978687db0957c1dbe3353c42d640d1fb76f914f979fda768169d74f8abc194b'),
-      (77, 6, 9, 45, 53, 'fb3f7566ebc87105e321fa8de4f59eb25daff8691a15e2536dca631ceee8cea6'),
-      (78, 0, 9, 46, 54, '23f22dcc3235881a3940b7cdec6792c0f053427a694747f21514d6b225d166b1'),
-      (78, 3, 9, 46, 54, '35cd228b4bf0cbbff96f478bae471028c10a9f271722e339801a4775c7015f80'),
-      (78, 6, 9, 46, 54, 'd203e4aa1b587fa319cbf87a6513a545e50f528531a7157ad42146514580ad17'),
-      (79, 0, 9, 47, 55, '5d21989acc6889569ea553064b9958d6ffeff82c2de85421f8599dea49a7e476'),
-      (79, 3, 9, 47, 55, '6274a2314b4f78e210dfe3965dd1a7ea7f82b8a844e4bc57ea28fb079185dc7e'),
-      (79, 6, 9, 47, 55, 'ce9fd857c4fe0586637b0c340d1ffe96e56a2132d746aef60585df8afffb8882'),
-      (80, 0, 9, 48, 16, '68f020bf50aeb00a04872f04f8f39d8f7d470e935f2e061e597543360596bff7'),
-      (80, 3, 9, 48, 16, '62f15caca5ef32d7250ab7849f9a138fe4dafdd45ec00f80df6631151e4e3691'),
-      (80, 6, 9, 48, 16, 'eb90e0dc55b1f8a9f7b7569b33d09097c2b9a61d0b5851048f39e858a5212fbb'),
-      (81, 0, 9, 49, 17, 'f79722e8faaa8aa36746b6d5a54ca9b221fce31f73c69616440bfb049e87f7f1'),
-      (81, 3, 9, 49, 17, 'bb62010e5365f8f0798c858e87115abedb9f459f9f11c4ab9eca27b76d1cc971'),
-      (81, 6, 9, 49, 17, 'e9d681fc1a63d3115296d197818fa99f21ff6a2ce05a4435b9093c3b3c437936'),
-      (82, 0, 9, 50, 18, '819fffa21e32a5c32c37ec00a2ee326bf5dfe25d76e43c7c2b649a12b80c95e3'),
-      (82, 3, 9, 50, 18, 'ad3255bc87eb4ecef869bd7de9ef177b86a9951a8aad6f37c9287401b4ac1473'),
-      (82, 6, 9, 50, 18, '6f348e9aff6799d3e5beba62ceaa1c1f31428e06d1a9dc18bd5bf364c0f0241e'),
-      (83, 0, 9, 51, 19, '7ea0d1349fbd6e31d562b2c8486cd4e73df3daf1c8c63ba8a16382792fcc84a8'),
-      (83, 3, 9, 51, 19, '24c00a9f3d4b11b2e1a83d32704c37a6e1b5e569e488dcf7dcc4b17805765d6d'),
-      (83, 6, 9, 51, 19, 'ade93aed7fc55e4b08f7c2fa875ff415826b763bdc6d416c52b4617f1200e34c'),
-      (84, 0, 9, 52, 20, 'c9750fd71d827678dfe81b55d6ef17c12453ee0eb05c8acb487bec6791052322'),
-      (84, 3, 9, 52, 20, '219de635026f0f4a07fbd7b687ca70b37f1d1e38686cf770431271a276b700f5'),
-      (84, 6, 9, 52, 20, '53c40a9aa597d7e0009de790a9c6a3c575df9d5a9c200368c1a0f2e5a3c3d9c6'),
-      (85, 0, 9, 53, 21, 'c23e6e1b28206ee891f6e2f0c17a1152ba4b62f991f540acc3876b78ab579950'),
-      (85, 3, 9, 53, 21, '50aaec1f20c6d18d26fc2d4967af3d30942dcfb4819f3e302eeeef19974751ca'),
-      (85, 6, 9, 53, 21, '133c7672751a1bc26e5549b812dda65f0a3fe746f48b952cba06d3d29abf867e'),
-      (86, 0, 9, 54, 22, 'fa14b64a2197bbd9090eada04a10d834a7fef4408bc9260cf299b526880d9bcc'),
-      (86, 3, 9, 54, 22, '8f6c55c79b6577635ec1511ecbc6f78c0989e067ac2622fb7b825fa80151f66b'),
-      (86, 6, 9, 54, 22, '4d5e65f3b0f8b00aac7be9338c117ed6052ba5174d8a20c83381e27cca5a587e'),
-      (87, 0, 9, 55, 23, 'db1b98e74cceecf628ad594caa9b114b1d2fb24edf3a5c0a5042c635c750a87b'),
-      (87, 3, 9, 55, 23, 'dd5a51418365d4674e7ab9f25ab94934d82d5702d1199f23b9676f91b5d747e8'),
-      (87, 6, 9, 55, 23, '3248260f472d04e3d6f29dace769bef5dfcc3b57a147844f2d9dbdd16c8d19f8'),
-      (88, 0, 9, 56, 24, '14c6cb17ae0c5a10c3cd289bdf2f936a6cc64c3c33d2054ef0b5864d1c7f8a68'),
-      (88, 3, 9, 56, 24, '8e8957970afdcd493f91c0c3baea125109fa4dc9a127916812340b5ebb24cb4a'),
-      (88, 6, 9, 56, 24, '552a5cbc2aec3ef8193b64a084977f019dbd9e0dbbc3afcf318ee38f006f09c5'),
-      (89, 0, 9, 57, 25, 'a5c38ff14e9d719675355a9bea47a578debba8ee756e807d117d541fa8589fe0'),
-      (89, 3, 9, 57, 25, '985a017c12f20811761e6c3b1a4fcbdd890dec3edeff563a81370d5222e23b35'),
-      (89, 6, 9, 57, 25, '4c8a3144758b99c348e0256991ea0305de72c619432960238cc9fea24deb6e2a'),
-      (90, 0, 9, 58, 26, '18c399069835981fbee9e5b781689d77d267fee4a182f22c435e73f0ade1c895'),
-      (90, 3, 9, 58, 26, 'd94a40b0b331be9cc4b76dd7aa4a5ae7404c4d3d4f5004f306b9a91944ae4023'),
-      (90, 6, 9, 58, 26, '9323d693082b00d21bd10bec890a338c03413449a27f739459909310ddbda2b4'),
-      (91, 0, 9, 59, 27, '4fffcb25e04286876b0801a3740146766e2abdfe9fb6e0f5b3a4d63a6016aeff'),
-      (91, 3, 9, 59, 27, '129ba30819ae15d49ddbd42e1c4ec85901dc4225ee723474fc00e5c8038b59fc'),
-      (91, 6, 9, 59, 27, 'bc5d856bd497bdf32c7b3c67df2cec619efc00c04b94051089fabfe57a31a346'),
-      (92, 0, 9, 60, 28, '0318b86dce0306e15022116b4855f84a4857e452dd74fed9b90ecf828525f5cb'),
-      (92, 3, 9, 60, 28, '1b28b3340673b97bd4f75ab4cbb4503054828f04a4d83c24589ebd6ea858e3b8'),
-      (92, 6, 9, 60, 28, '19b4d362fbb249cce08ae987b4b94b3a1962509f01a031fbe57d4cc8a2630175'),
-      (93, 0, 9, 61, 29, '823098a7803fd8a6b35ae9d8f8b7d673596b633a68ffc549ccfd5295e02ab674'),
-      (93, 3, 9, 61, 29, '147b66ec1530e0cc9d50806a4a4d1364e36fcac2e4e5792bcff1f48c011bb6e1'),
-      (93, 6, 9, 61, 29, '2adbb2a87c1620a6adb0c6f25b466209b5ddd6ae05333bf0673793a7a1103a1b'),
-      (94, 0, 9, 62, 30, 'e1d3fa89f0620c307dc46aabae6b84041f1ac9b452fb326d095b9b12a1740ff2'),
-      (94, 3, 9, 62, 30, 'ce7c825540b5eae06edf3b0e69a83a3e88e9086546a55cc0d950de1707929adf'),
-      (94, 6, 9, 62, 30, 'fa20619f0a2c368fb3722a233973d481ce4a5adaa08ae100cbbadccb0e7352e3'),
-      (95, 0, 9, 63, 31, '9f64f1f39279d3a6a3f63b53c169a5d3799544335916f6921f4bf3c2d786bde2'),
-      (95, 3, 9, 63, 31, '562bd8f532fb71b7fd7cfa9bd7cc7d1186d2e26a414e2b94c85125d882818af6'),
-      (95, 6, 9, 63, 31, '7a0aea297e79f28211f06dc554514d2f093ae0caa9507baca52788fc2a3ec53a'),
-      (96, 0, 9, 16, 32, 'd435f644922490082ce186c00c4bbbe55370fff6da07356f1c2c6a6f078a2b30'),
-      (96, 3, 9, 16, 32, '395552329cc173f9554eae17fbf0cd1db9e91040a847aac0bcdf135051476e31'),
-      (96, 6, 9, 16, 32, '04e6e32e16675473172f12ae3c44cbc750091c2d5f8bd41bdf420c44e6178c2b'),
-      (97, 0, 9, 17, 33, 'c8740dce7c1f40f8c5e5099c7b0634f313dcbb49e0ea030a24d5b8e118734163'),
-      (97, 3, 9, 17, 33, '7b06030a46cf296df4e30998f126b6a06c337e8d5a744c232385f9e1731a9b34'),
-      (97, 6, 9, 17, 33, 'a921e9c0c121c27225c1f41c8fb5027dbae061731aeb19c7ddb1172376145b03'),
-      (98, 0, 9, 18, 34, '718de6ce44eb09af2204362aabfd3384b9c132414bc3b4e79e2933475af33b99'),
-      (98, 3, 9, 18, 34, 'ffad07482743f47570b8991fcb36beb8b8339ce2cb1b4f391fc94860fe9efdf9'),
-      (98, 6, 9, 18, 34, '9ebacf864ae03b8ddad143ce26899b1cb95ce3ad58daa67ed462208ae7c756e9'),
-      (99, 0, 9, 19, 35, '3bc692c035c7aff3356c9351e5354ec95a527085f39ebda0ea780a29c097f640'),
-      (99, 3, 9, 19, 35, '1db82243956ae6393c1f7b95b8ea27942239b7dd0eed69f3e3b2be43025dce0c'),
-      (99, 6, 9, 19, 35, 'd762ad07a72a30ccd4ffb33cb62b28445256e7bfa50fca97c47ce0cac09be18a'),
-      (100, 0, 9, 20, 36, 'e50f05089f51080f856e3c0b2685ef9dc8b1740dbbad8e614d73dfa4c3266290'),
-      (100, 3, 9, 20, 36, 'ec42b3b012d558684d9496bddb54bf7b55d62a5b56535af06cf5b7604f3da6ca'),
-      (100, 6, 9, 20, 36, '4f91cc43069b89561d54c2d5299b7dce0f4517a9f32af890a99a38e8e15bb90b'),
-      (101, 0, 9, 21, 37, 'f0ba6132ce731dc4bfb2238356b72a666e7b48fe3c05e10382544fad15604895'),
-      (101, 3, 9, 21, 37, '2f2e993155944157b2019ab4f2387c6acf7615443e72edecbdc5bb5880b16757'),
-      (101, 6, 9, 21, 37, 'cca6d4291c1357ec09bcea7cbe447d7d6fce002fed45c2438b476bbb9369401e'),
-      (102, 0, 9, 22, 38, '00a747eaa132d7c8a3c09f11d4acc3d0de2056a481a9371dec78b1047dce6ea5'),
-      (102, 3, 9, 22, 38, '0fad0a5b64e60cc9101f44b5a7b1c1318e5d310216bf1a582a44ed3a2082bfef'),
-      (102, 6, 9, 22, 38, '5ce66e6e39a0e474f7457fb87dd02b2afdbc8a76d7769ebe521505b07be47178'),
-      (103, 0, 9, 23, 39, '0a44123e28bdbede1ce730bf84ff6462c67af184e939d10ce8546059f6edba1f'),
-      (103, 3, 9, 23, 39, '19a2f07f0b43da9db32c72391b54f8c2a222b087e5ad92e893489aae9b2a42dd'),
-      (103, 6, 9, 23, 39, '1342059f7f9a824e0d0d03cf542db9ee33d3a0aa89e0b57e9cc283ab9eb788b3'),
-      (104, 0, 9, 24, 40, '587766bc3249b80c9fc35ea06cffb996079cd0673483480bc83c72b4e96ad0e8'),
-      (104, 3, 9, 24, 40, 'b6c7219574c76963c260480551e054102d8e4cfb1d1a63ee8339e9a335957d7a'),
-      (104, 6, 9, 24, 40, 'a63c2c187bb796c4aabfadb60ec6b1c76fdd586a0c0b2d2666d5e34c90397117'),
-      (105, 0, 9, 25, 41, 'e42fc03bd95f41d0d7ca6a29c576f8665fda4786862da6a762ce27ec4c0ea064'),
-      (105, 3, 9, 25, 41, '540e0c647db8d694f309b0d25e778ada14f0e14210a110d52f989b2a85c2a4b0'),
-      (105, 6, 9, 25, 41, 'a73c3909ecf1ada4b56acf1f61593a7eff03ded0a43974795734721f06f58d3e'),
-      (106, 0, 9, 26, 42, '63a49e592730d6892df41f711c5b881dc09dd09727a0bf30903fdf8c4641390b'),
-      (106, 3, 9, 26, 42, '79be8d123bd3e7dea41302e7dc999a5ce72118f2a0eb99f5452c3e0a13d643c4'),
-      (106, 6, 9, 26, 42, 'ed087ce086ac21228d3abe7819c659d88a9c7d58e10b5f0753e6bdd2d1fa6bee'),
-      (107, 0, 9, 27, 43, 'd1b6c49588522ebc6df0bc1b1af7afe9e153654ae4f5c96d5237544906a5c514'),
-      (107, 3, 9, 27, 43, '31398a8af6fb6bde43d6ecf657b0ee8d7e2870065856a24208fd552d34289d8b'),
-      (107, 6, 9, 27, 43, 'a9efc1e57207509da598640861c39621054774566425af238d28ed343dba6e18'),
-      (108, 0, 9, 28, 44, '2cb7b33714fab85b60f942fada6f421e1970c76987d65f7cd6be3ccd503d1b89'),
-      (108, 3, 9, 28, 44, '771eb7c954a8693c7c949765e4b07580aae53ccb5310588d817858fbda1f13dd'),
-      (108, 6, 9, 28, 44, '9b8681e08ca718538d63a1866b0927cf0f045fb050beb9294c96477ec8462b6d'),
-      (109, 0, 9, 29, 45, 'c28f6f19280b2ddeca3b3143302fbb2c12358a77981a98a2af4cc8c7c61aab5d'),
-      (109, 3, 9, 29, 45, '2d9281f22ef2518b0636b87e30117bbe8d7262d9847f5099bf39ca3f2af3f5c5'),
-      (109, 6, 9, 29, 45, '9189acfda59a135fe4c3fe830a2b47b866e0d0db65b4d0cd5395d1928ae1ca7d'),
-      (110, 0, 9, 30, 46, '7b10453e3f69c0082e7ebc129f229c5f580a33ee847c9202034e63b4678b9d6d'),
-      (110, 3, 9, 30, 46, '255fef801ecadf7ba0ae2636b89b34ce056b0643cf1bafa8799aa5ab8416d61a'),
-      (110, 6, 9, 30, 46, '1441627fd5c52ddc3db0a5ba1b9906dc73d4c435715d7ffd92bb9aabd723466b'),
-      (111, 0, 9, 31, 47, '2937e3390b941c2c76255ea46e3c7ec7ee0bc230bcd376d52963a8e1e46daeb3'),
-      (111, 3, 9, 31, 47, '93f51739fd251d89a12bd7069901e6896d33e57d00a73766c43aad739ce9e7c8'),
-      (111, 6, 9, 31, 47, '0083c0f1b988d4206842a50b86cd6ee9026b680d5ccdec96d3640d2cea2f5758'),
-      (112, 0, 9, 32, 48, '7b9afd84a16f814f2eadb5d8e8b2cabae35c50b5c6891cc0344ead1a6cc69404'),
-      (112, 3, 9, 32, 48, 'e4dd71b23c4693759cd03bb38f5212f07e2361fe47eb4424931be7b975f95cf6'),
-      (112, 6, 9, 32, 48, '8ca4fbeccd529ea36cf91959b3ffbe023543c9d747d7d7406b0461cdf9e9e3ca'),
-      (113, 0, 9, 33, 49, '3a6156049a83670624a3f0428d0ebf631721327ad0bed8a40dc31f68d96ab1e9'),
-      (113, 3, 9, 33, 49, 'a8442072da8362cf3a040d454d8654dd40995762471ff1361e59ce366cc85bd8'),
-      (113, 6, 9, 33, 49, '4747755b0ba1a59f20361daa77b6f1aad9d9b047dfbbbe4b5f551217aa8da962'),
-      (114, 0, 9, 34, 50, '90fd0f3ede3d97d5f96fb77fb1718ade20bdce1eef5704074415d22566489dca'),
-      (114, 3, 9, 34, 50, 'fa26003fd86bb6c8a232d0a49cef15f24c73800e6a742995bf310edbd107c0d0'),
-      (114, 6, 9, 34, 50, 'ef3d91a1286b5a55f1a6d44a8e0f0ab1deb7ca09ad40b7894529e13b176fca3c'),
-      (115, 0, 9, 35, 51, 'dca7d284fc43217ac6445607ed3b2163fad763297566adfa3936aaf138d64cc7'),
-      (115, 3, 9, 35, 51, '8553d3714295555b3b29efaef55d85d025cdae176d81ce954d5475cf8a8e6bcb'),
-      (115, 6, 9, 35, 51, '0e4d7e3b71329a12eb2ce4562b78b8bc1c4b192e47c0b2397d75da4a1aeeb620'),
-      (116, 0, 9, 36, 52, 'ed2df4df560ae35f96e06de8c8ecf0b20438266c17913a164ec813550c2f1e1d'),
-      (116, 3, 9, 36, 52, '5bb84bf0f5dda5347eb235b0b79a3ab61d595b8d2660d8d6c32b68381122ac5d'),
-      (116, 6, 9, 36, 52, 'ff1b2fabc8f97027dd0ca24c01877998d6d940821548c94499633428417f9dc5'),
-      (117, 0, 9, 37, 53, 'cd254bd7bd616f014d062affd4bf30a5a9ceab7707605d1d72f147cf1a5e59da'),
-      (117, 3, 9, 37, 53, '53d8c843cc005cc5872bc10d68e14efc3fe5f059c5a7fb2b1af58161e579bc65'),
-      (117, 6, 9, 37, 53, 'f41ee438b0e249910719622bb4e46896f7e625d3eb65f92a5bdceea208f5c12c'),
-      (118, 0, 9, 38, 54, 'c54e8f87bdcb3cb4c62b0e62902137b3dc9c57192f9aa421a1d7d904b9d9bdcb'),
-      (118, 3, 9, 38, 54, 'a60b16cbc6fc47de9017137f87a73d41239e14346f9a42d82528e5a1876d4b36'),
-      (118, 6, 9, 38, 54, 'cc70200e78367c2d0dbe7932246237f90bbf1f2eb559b2b98edd2a71c3b0b744'),
-      (119, 0, 9, 39, 55, '2951628a98327a9c6358972b64406f3344a40ae64ec40937d37fa814327143e7'),
-      (119, 3, 9, 39, 55, '87940fd9f8e84d794f5c3363cdfccb091a86356bd1d6e9fb321866f824aa2b8c'),
-      (119, 6, 9, 39, 55, 'd341201c9bbbe8ebb452b09ca27827690c7de2584c80cba0a59fa9e1ae3cc626'),
-      (120, 0, 9, 40, 16, '969fff50bcde4211daff0b3c7f3b5a49d29dba1c4e9b2b3708d54839fcba9ad9'),
-      (120, 3, 9, 40, 16, 'fc891fe927e275767aae98919e5233e10ec90495cd058299408a52625e289354'),
-      (120, 6, 9, 40, 16, 'bf287fb459bd4c393f7bbb44e7c9b2712da441d6b68337db921a4d2b6027ce98'),
-      (121, 0, 9, 41, 17, 'afd9e97e2bf1c4406ce13ac0d812bcf419f8261b5d2558c3634f9e293b14b84a'),
-      (121, 3, 9, 41, 17, '445ddc53fa96e6b10cdd49e00e8000c8893f56b16de3a25e87249dd9dac2bafb'),
-      (121, 6, 9, 41, 17, '423c71b2a4997c6536910f90c9d1a558f5f6a52680188c0b406babd61c227cfd'),
-      (122, 0, 9, 42, 18, 'af74c3e02101ebbc0382cfcc5cb963b56d6b1abc71510e1858ebd9c1cae39fdf'),
-      (122, 3, 9, 42, 18, 'b068ed5f3d3c69bb4dc26623672441bcbc04bf4d6aad9f9636fe522d32808578'),
-      (122, 6, 9, 42, 18, 'c1e82928161d1fa9a4afdb6a945458e72e7ccf8d1eb375a8abf226bfa5e1a51f'),
-      (123, 0, 9, 43, 19, 'ecf36c9b8efa998b06adf5167c1910c74f9e0301b267a313a091b5021a0349b9'),
-      (123, 3, 9, 43, 19, 'dc4acab29e207b6550b65a762243c2e10624c235436f71c627843179bc9a08eb'),
-      (123, 6, 9, 43, 19, '21e816858683d51e9b7a004346f0458ac2be03938ba0ecbd922bc3e6c46b08a9'),
-      (124, 0, 9, 44, 20, '88d99b7b36eb92fff767e76a1c711394b3f873c67e9c25e082d567186817d6cd'),
-      (124, 3, 9, 44, 20, 'd967a2debd955ddc7f5179d9a5bc6524ea448f8f44ad784368a7885363780195'),
-      (124, 6, 9, 44, 20, '18c48f30f5f9d44ab4224bf6b3d3928d77af916f15001088f7ad7933c3feb264'),
-      (125, 0, 9, 45, 21, 'c9dfd4603b35c39df1304c51245db19a2ed9894f14a39b11bf8ddb86bfd5f8f7'),
-      (125, 3, 9, 45, 21, 'cbd86a79f8536fda17d6c6653dbcefda7741c14fcb43f5d17f0f86c4ff77d7be'),
-      (125, 6, 9, 45, 21, '86a5bec9ec2f055d77dd9a4911a056a72f6facb8b0ed4864a63db4bbec040c38'),
-      (126, 0, 9, 46, 22, '57ab134bbd06d6f8812a275b953e802b8e51ebf2e36cb10f334bd3a1eb418404'),
-      (126, 3, 9, 46, 22, 'bb417f73bd87e99e14558cb12b0f2468f5a679158d41b35fd4e37a0d57020c15'),
-      (126, 6, 9, 46, 22, 'e757258a3e9d3eb8fddb5ecc74dfbf487497d802833185becb45ebd9b71890d6'),
-      (127, 0, 9, 47, 23, 'a350b8a33871ace19c1453ac1e091dd0111bafe65148ae836165f7422128a1bd'),
-      (127, 3, 9, 47, 23, '91910cb1b2c4677791cf749b2326e717b26d63927402b413fa6cde39721e4ec7'),
-      (127, 6, 9, 47, 23, 'c7554e57e9e8790f8b1b8a7f16a54e4a31a8c20587ae8e0f0d7950f32425dedf'),
-      (128, 0, 9, 48, 24, '8377c0986399dee7d6a515e0ece0bc7285ee99de1a0a08ea6cd7cc555cc45fbf'),
-      (128, 3, 9, 48, 24, '3f70055fab97905087607c6457d163e79b93a47c84b094c60f000f4a9e06aeb1'),
-      (128, 6, 9, 48, 24, '1abfe45e849b3b0d9a8e6b142c11b1dd2e0410fe7ad75fc1ce1b5bff6c160df7'),
-      (129, 0, 9, 49, 25, 'e0678696f9a508beebe7a520da246222f1d7d548bd5109936fd0468142ab0fd2'),
-      (129, 3, 9, 49, 25, '96adf5b36ed4c926f678f8687efe3d2f2571934be03c03794408d3fa00d5454d'),
-      (129, 6, 9, 49, 25, '158d48e81cc7f02260d945d6615ec49a72ae682f922e9764bf25b756619d5997'),
-      (130, 0, 9, 50, 26, 'dc9783435c2ccc2b0626213998071c3341ecfee0d52f2b487aa4fd3d5823e499'),
-      (130, 3, 9, 50, 26, 'b06f13000bd8afafb08d463b8d43845f36a7e2ae6493bdafa5a21e541284b39f'),
-      (130, 6, 9, 50, 26, '1efe932891f4b4cc748465ef9a198424aed5b95300bd12bf4735d0180ce772fa'),
-      (131, 0, 9, 51, 27, '88fd1b8d82ce09fdc4fa2373204470d1f2162a9aafa9dfc0d8f59c318b3d03cb'),
-      (131, 3, 9, 51, 27, '9b9dfde71a3d3e0d404fd3b5deea9a3c9ade394b80364e082a161667d3a26805'),
-      (131, 6, 9, 51, 27, '66dee915908a109016ee0b45f8463006434395dee206f5a24185bf88a786f775'),
-      (132, 0, 9, 52, 28, '91f610f5a189487a088b8904ffcb1501ede3990344cb6c4e1dce5faf65c46c69'),
-      (132, 3, 9, 52, 28, 'b0d3c4389c4fd23ce7cb066068e49ce4dcf55225c1a9089e042d9d988a34391e'),
-      (132, 6, 9, 52, 28, 'd051f8b150c170d97f9d3dd0d07adee6ae8c243752ba0fd332c390c5f20ce005'),
-      (133, 0, 9, 53, 29, 'f46631cc554116a5a076770d3187fb544ee9556b3ab5ac8d536cd5b374ea5254'),
-      (133, 3, 9, 53, 29, '2471b4ea9fd24f5312213ac725ac9c701b7242f2248ef148ea438d8bc7676d21'),
-      (133, 6, 9, 53, 29, '6b2223b87893842ec5ff2adea74a8df84a288962452110ec5387e09ff5fc22ef'),
-      (134, 0, 9, 54, 30, '47a7fa0f198ca1283ad679c4d1033cc58d3d68c7920a1153fb6ccc6c905f79bc'),
-      (134, 3, 9, 54, 30, 'cbd9d7ba7ac6a0cd00972c8960b4c3c56cdf3a526a26eb1f3bf4db3ac0e0021b'),
-      (134, 6, 9, 54, 30, '3ea3461b2cfd3e59628adbff596af8596353831902831d3dc881669ecf308ad1'),
-      (135, 0, 9, 55, 31, 'a60f50d4ea6570811280de3f6f124944c323a45a396abdee4948c6632e82ec0d'),
-      (135, 3, 9, 55, 31, '5c46abcd1056ddc25849c55881fe597549d248694bfd460b9aedad80b683e8af'),
-      (135, 6, 9, 55, 31, '8d4d881a9015e4954bf88f980e4ce142516ce20cd16c0c80e748d5d612de563a'),
-      (136, 0, 9, 56, 32, '89f05ca7b5718dca2e25a191b97dc9c3649d17af10ed70f689b4efd4df36de75'),
-      (136, 3, 9, 56, 32, 'ddd62bdba7747b0bb814275983c1d3d199e81c69c5d0c63eeea389d8483d763c'),
-      (136, 6, 9, 56, 32, 'f8d4dcfb72adfea7fdf67f99e8197ab287a53a530e686a76f10b891118fa6102'),
-      (137, 0, 9, 57, 33, '6397dea6638fbea535b505c3e128568433529179e36b5138a71b97a84616fb13'),
-      (137, 3, 9, 57, 33, '8b359f6b8f7d578f71046a9a0f6f7d6048b34004e347e4552f35398954ebbef1'),
-      (137, 6, 9, 57, 33, '4822a7d54d985b6eb7969ab61742660c94c0865cc8c681dd46e3e56396dbddda'),
-      (138, 0, 9, 58, 34, 'ce2ba1215c3989db29bbd18b70b89a957ee3ef6724931a02f0d11812abadf750'),
-      (138, 3, 9, 58, 34, '8e6a831e2ac4655c23f10faad7bb41efc241855d0157130771babdf2168e3e3b'),
-      (138, 6, 9, 58, 34, 'ef20dd95316b9a36fb28f1aa7bbec5af4c48e0c04086cc6fc663ca0f2f9f17b2'),
-      (139, 0, 9, 59, 35, 'f2855fe6addd308c361344446a74e8ab7d300c13f2802847de1f943d87066dbb'),
-      (139, 3, 9, 59, 35, '91594cbe5160d1408e18ff80395fd1973a8e04fb449fd5e76e6d84b13c26c239'),
-      (139, 6, 9, 59, 35, '238bcc44e4a01c519d442cd541378692055931b686e9f9f39ec884bf56f4484e'),
-      (140, 0, 9, 60, 36, '46b73e4ed410a8ef7d923b9e97d838c0d3ab34a9578c73195a2603a42f3eddfe'),
-      (140, 3, 9, 60, 36, '454d959e36c2d66dff37e0ee125bf5149d5ec99e7c7a6b5e66cd919ac141a1b2'),
-      (140, 6, 9, 60, 36, '73ebd93d77fc7e5c478244a09fcf20758f1698fab6c7f2c043b123d201da8602'),
-      (141, 0, 9, 61, 37, '58836f681640b9cb9908c4c092ca88ae98528be5722fdbca05496f4b642056a9'),
-      (141, 3, 9, 61, 37, 'a6503d912dc387e9e17b256ac5cab5e4c1cc83478aa78c5fdc85a7d82a0b671d'),
-      (141, 6, 9, 61, 37, 'd4fbafea5dbb2a94c238cdd21ed6390d931961cabef515b494d26431deb94943'),
-      (142, 0, 9, 62, 38, 'e4292486761589b9bf2e0117b1f3d8d1b37e1aa23232ed1bdbc205ea8a8c8568'),
-      (142, 3, 9, 62, 38, 'b8b45d624d11852c0cecbb65a2dd67d0f983f40a41f3cb6446772b14f83a3fc2'),
-      (142, 6, 9, 62, 38, '8f00a058a9cf87f1d85e38f321500dcdc5e4c703ec24b077ca4eef24521ee5e1'),
-      (143, 0, 9, 63, 39, '3fdc5619e34a0124605d6042d9c090883bdc7d7474d5d498e34eb086be1adabe'),
-      (143, 3, 9, 63, 39, 'c1b310b8511007cfe6ea5a61502522efa2f25f071665c2ee7bca8b84086972f0'),
-      (143, 6, 9, 63, 39, 'a7fe2c0b8c42aea06d2be0f225d2d3bf602e544f7f1d3e6efe8c39b39d881df0'),
-      (144, 0, 9, 16, 40, '854d91b38378ab632657e5d9ca58a9635801152516274233485e2fec8e2b495a'),
-      (144, 3, 9, 16, 40, '5accfaece944999a6e50408cbafe2e5e4f62fce297675746a017a082e37d9789'),
-      (144, 6, 9, 16, 40, 'c46ff1baa17dab3754b5c908f610739f857a0874dfbb3883ef674dfc41dc4e16'),
-      (145, 0, 9, 17, 41, '7a0acb97bfec6101e4d13a4d031659da5a66947770cc1e7db13746c789451223'),
-      (145, 3, 9, 17, 41, '4e0300f2ef8cee202a62eaaf6b8d50dd28c7142ba593604b23d934e48dd23d0d'),
-      (145, 6, 9, 17, 41, 'bf6e8464fad2dd74464eb5a64ee9fdcc0271d8a3466981f00056b58982fa0522'),
-      (146, 0, 9, 18, 42, '8a36a5f5289c255e889f0296aff90b3f64fe446e7efa6d696d25b0a975383221'),
-      (146, 3, 9, 18, 42, '358b7d1e4cb9501bc98ab47eaed37e265767577cf64ac26af37065893395106a'),
-      (146, 6, 9, 18, 42, 'e3f84ddd215b822d08a05431be3466ae8eb647b2e8f2153e677b2957a14111d8'),
-      (147, 0, 9, 19, 43, 'b9a728f739687b4df1b4d469d3e89ac5172ff414a10c8bdbff3f1427a0491d66'),
-      (147, 3, 9, 19, 43, 'eacb57c058886447d2a7f8aa1df0db16467c3dda7c18a948309abdf8848a3b66'),
-      (147, 6, 9, 19, 43, '1bbd76e3093eb414d8248d4db061daa78b17b5d4fba68197c0ce16f8bbe0206a'),
-      (148, 0, 9, 20, 44, '48708ca2c6a9c2c233e22f24d79d532bcc0abf04efb97c1f9584f01a91d60226'),
-      (148, 3, 9, 20, 44, 'd8839ff4c6e092f71e364702f81cdfdf3d5c5d43616932959c1955397456b3dc'),
-      (148, 6, 9, 20, 44, '0e05bcf92896d3749aa7739a2c74fa33d031decaffe34c1bfba8ce5af3808fca'),
-      (149, 0, 9, 21, 45, '666288b8426677f15d17b89a6ed42b804b1abfdbc20a071d19f6b626a6915042'),
-      (149, 3, 9, 21, 45, '69b86ecc24abda6ed93009b7584959c69ad0ba748cb6d60b2ce8c38d0b3067f2'),
-      (149, 6, 9, 21, 45, '41b98855fc6a7aa341585318d7a628cacd698280d73454dbeffc6d3725f2778e'),
-      (150, 0, 9, 22, 46, '023b29cb1272dd8bdbd7ad0c94e810963eae76f52e226620ce0f2cb15ee2af96'),
-      (150, 3, 9, 22, 46, '0d480e526cf4eec01b5be1b3cade05b93b4c89ff1ecd3ad6987cc4ca677ab46c'),
-      (150, 6, 9, 22, 46, '9a3f284aa1f5f3ecd4a6e893f02bfbbb801b5501a209366e8471b8eb164e345a'),
-      (151, 0, 9, 23, 47, '4be12806c32f427297e2e77fce908a4ad6f70a227c7d240186f1e9d4952ca568'),
-      (151, 3, 9, 23, 47, '30021c114d8e2a17a0e43ea68e9c5618567c06850e0c681003c51765d7a58553'),
-      (151, 6, 9, 23, 47, 'a9a42387a24bccd094ba1ca3083b0761b1272bbe45308c0374de11273503c2be'),
-      (152, 0, 9, 24, 48, '99bef1c6008b8956dc283dc7cfaa83261db4fb0641a23392f0a20d52ea88df10'),
-      (152, 3, 9, 24, 48, 'c77c50ac59c65c375adf5d040f1005c91ab81f63effd8487f1ceb802f54ca1cb'),
-      (152, 6, 9, 24, 48, 'a529e8c51871daba2ebcd2ce3520bc431bd50a3bf562ae3ccc6a9113056e8d61'),
-      (153, 0, 9, 25, 49, '8c14193b071d97bf0278fc03cee2f1987c79fbe9c7299d494ea4485cfb7bdba8'),
-      (153, 3, 9, 25, 49, '6df9b269d8a230e653bd3b95db4a56518f40f3c6ab4f95d2312c5cd36765d0e8'),
-      (153, 6, 9, 25, 49, 'f20e43b0bad6857764ec93a6dd7b57802e65e3a5c0ff41e6d70fb0278dbb31a3'),
-      (154, 0, 9, 26, 50, '6708a3a3325f5ba022cfe29ba63521cbd7787503b3fbcaf25d9fdaa26796aae0'),
-      (154, 3, 9, 26, 50, 'e27e203c9a5c44f0989a4c5ef083cb10ac75ffc031d29e3fac6fd892abd0d554'),
-      (154, 6, 9, 26, 50, '1cbb739a11527c981c4848a1ee3c1463a1ad075832ab616bcdec59b285e878fd'),
-      (155, 0, 9, 27, 51, '9bde9940d9a90451932ced1657b2267374e7416a77847ab9ff4acb831853e31f'),
-      (155, 3, 9, 27, 51, 'd421af2b7966ab80f52a4d893495a105f47d20cb4aab4502034a14e3e2747d81'),
-      (155, 6, 9, 27, 51, 'b676ccdfc0ec34b1db5e5b6cfc32767c89fea57ab04d94e1835a9305ef28b47c'),
-      (156, 0, 9, 28, 52, '34f0bc3a0298e59304aa8015061eb79929ac4db607cb04cb4f94d9b40446f3e7'),
-      (156, 3, 9, 28, 52, '90b13ecfcdacdafeb2e769ccc6b01412d5fb5ed36766eee93f1bfddeb767a469'),
-      (156, 6, 9, 28, 52, 'b1c14d89cd9f624e6452a608252d13fb1530ed3248ea841b058f0c0338999b29'),
-      (157, 0, 9, 29, 53, '430aaf82302e710d865221d1d33a683b69844552269a4e4352bfddbe49e103f9'),
-      (157, 3, 9, 29, 53, '6c105b210ed581820ab741a5b45b732978dcd048520a0ee646563a6da23f6f6b'),
-      (157, 6, 9, 29, 53, '7fb5d730339ac3a700913d2aa5a58004f97cdd278e24b9fcdb1fc0972e3df639'),
-      (158, 0, 9, 30, 54, '04a33a142bf870e3326a07077655019c2e7c6bec2e3a6a245ce533e1e7044057'),
-      (158, 3, 9, 30, 54, '1de5c714e22f228e9a2338d732823af9ea25899407702f86f5f1ebe35859eae3'),
-      (158, 6, 9, 30, 54, '5b3ef24ad8c99b18bc64313066b26ea16968ca50b564eb8f0056e9244481cafc'),
-      (159, 0, 9, 31, 55, '87c1d22fac0d7eca27cc21e25f3e6c1af5998b8bfb5f2b876dca34cec08f361e'),
-      (159, 3, 9, 31, 55, 'ce3d4dfc97428b1fb9eae7597c0b646fa8223d9fe65f3cd845fc62a4d8132a23'),
-      (159, 6, 9, 31, 55, 'b5602d51f0a3e00b9577a42520f7662c790d86a5307260e37608793cca78fd05'),
-      (160, 0, 9, 32, 16, 'e0a35bc714cd764998c5547014941b146c21408f571da1202f2350fa1c2dd761'),
-      (160, 3, 9, 32, 16, 'b3f5e1ad3af1f073a184445246e248f8a939466e07b957c9c274d49c5547d966'),
-      (160, 6, 9, 32, 16, '7b24fea10e7e3aa739032673de0586e9473dee52f502288c006dc81336f06888'),
-      (161, 0, 9, 33, 17, '5a777ccee7ca0eaf9c9ac97bda5bd9a9f0e528f45e198e6e4341faec69812fc3'),
-      (161, 3, 9, 33, 17, '04dccfb296569aae6a7026a9a71fd2fd97f1504d19152ae8641d4c51ce8b1be7'),
-      (161, 6, 9, 33, 17, '6972a403cc230425a389105b37c86afe6e0d1ae450974fccbf6f1dc5d69cc5f1'),
-      (162, 0, 9, 34, 18, 'ef63944ea095a0106de03b307b6f8a35bf7b1d92894b74ca8589445a9fed2ca2'),
-      (162, 3, 9, 34, 18, 'd22df0be0d4e0031f055b487b90a55381d46e91771ef88e4c0ff907104d7cfcf'),
-      (162, 6, 9, 34, 18, '883c1be846e76e42b40cd1dcd0c67da8fc08b88b67f7dd13723e608d27a85942'),
-      (163, 0, 9, 35, 19, '4ebefba9b3682d9507014ef62122c6e4a65b7394ced5e5141b7c08c5867a2b7c'),
-      (163, 3, 9, 35, 19, 'e2e1bbd3112e48f87f51ba696672891a5b33f6aad625899824e6329000e90474'),
-      (163, 6, 9, 35, 19, '6db346e7c6bd5d7bd3fa607ed0e1bd4e55eee0016382a7f166edbe2b0c388836'),
-      (164, 0, 9, 36, 20, '791b9509a47bf690b323c6b994818254c513f223a6eebac61204fba4dc1ef99d'),
-      (164, 3, 9, 36, 20, 'b81f1a7eb40656dbc7f5fd98422e58ad287844da99d28ed7ac268bf446c72481'),
-      (164, 6, 9, 36, 20, '69c7cf5dda6408124ad93ea4ab62065e1a4e56b839f7d4599beffcaa7796af04'),
-      (165, 0, 9, 37, 21, 'aed4c8d5d8dda50697b48ca4d60b1a4fedb9b36543d79bdd14605fcf67622b5e'),
-      (165, 3, 9, 37, 21, '5de11c2623840d63e0da14176349ec58951d148dd41ae33ce227ba2d63876ba9'),
-      (165, 6, 9, 37, 21, '41985a2a8b1c739da387274481d07e1b6f2e9bdfbae18cb2a3286263b6811f34'),
-      (166, 0, 9, 38, 22, '3c750cc0af217c543b90cee4e4f5ee97b4a483f50be59c21679a131a1e1c8de6'),
-      (166, 3, 9, 38, 22, '74b7add77748ce6e46e78ff873d83b53c51b60853bec96bdcf7946a1c80e2ce2'),
-      (166, 6, 9, 38, 22, '687f60830079bc7f6e640a1fe29d101942d7db1e9a52cec68a0ac40c53b89f8d'),
-      (167, 0, 9, 39, 23, '19153ce751821b62c8a35ca56bcd8bf49c993bde45218ca4ff14b1cb9de81b23'),
-      (167, 3, 9, 39, 23, 'd7919b318a30200d205d44b09f2447520bdd56210eb545bcd8bd53cf20d08d3d'),
-      (167, 6, 9, 39, 23, '2bebc852a265e0667cb9a95891ac4b0729702883f91abf9aaf166141a6eae0e5'),
-      (168, 0, 9, 40, 24, '522540d1918e63655ddc7c31c0b50e2deae3a2a0f0bad46caa9cf7c4dd9bb401'),
-      (168, 3, 9, 40, 24, '8fc6ebffcd2a8471dcc8b6da71e86facd7b6bd5a23d3a94a84fd89a0d58ae831'),
-      (168, 6, 9, 40, 24, 'e6b7103c3b9faea4bc0668b8e55a7a0034657d1ebd3a03b32207809951f9919b'),
-      (169, 0, 9, 41, 25, 'a8ac162a314b1fd01d0ab17eadd28a754453fa75242c5e465d744796b80160f1'),
-      (169, 3, 9, 41, 25, '6ccc1d5cba939ec970b681e52be3ec84cd2eef3069dcb4d8e72a482394fb983e'),
-      (169, 6, 9, 41, 25, '07765646b12e946d819353baaa561d12d69cd7f6823d805c4ed5eab2f5adc164'),
-      (170, 0, 9, 42, 26, 'd040bf1de52d1cb6f6d1f8a29cafedebc406fc95b445ac531c3b974de0a88788'),
-      (170, 3, 9, 42, 26, 'add81168dd14ad71dd31c37ea77fa533923f0b7f8a5a9b6e9a4e61fb265c2645'),
-      (170, 6, 9, 42, 26, 'dc7f792b624570e247166c83fb47d79e1fec11062df267ec5c71789e938eedc8'),
-      (171, 0, 9, 43, 27, 'e2418355c1de8fdb648543164090ca69657a47181ec0db4a8bef69e894194a98'),
-      (171, 3, 9, 43, 27, '75a27622efd5edf20f1229e7cbe4584549e65ec16bb5d0da0863c5826870ea96'),
-      (171, 6, 9, 43, 27, 'e8a76663393d598440903ec937be71f090c5a11fa3e14ef30f6e48d121e765ca'),
-      (172, 0, 9, 44, 28, 'cff4bf516f9ad7b66a09551f5d0f34e6831e385b9f17ee7f48ee9c055dcd9e5d'),
-      (172, 3, 9, 44, 28, '628d86d609e7701ea9ab945b62ee9bc58ac1d800ba2532f143d92f4ca4b0e9ff'),
-      (172, 6, 9, 44, 28, 'b33bd1ed4596bc9c33c107a5b3c531aa2403de0e3e2c3a4caafc90eff10707c3'),
-      (173, 0, 9, 45, 29, '5605688f135e182aad3ba733521b5d6c6ba27193be83a3a42284b4266d63b704'),
-      (173, 3, 9, 45, 29, 'e3d709d932c6aac677bef17cbf0367c0f77fdd44072d5c4d91601301e4846e47'),
-      (173, 6, 9, 45, 29, 'f6f348d9418867696e85e11035d02470eb54570d55765fc1f3f109a026740567'),
-      (174, 0, 9, 46, 30, '08bd66738d33dba5721ed09f0f75233bd8aa9b77c2d09539cc5ca49075d855c1'),
-      (174, 3, 9, 46, 30, '965a33c5b55db31247859252a0f5be5a676e987c9a7ecddc556a809e3c6f205f'),
-      (174, 6, 9, 46, 30, '58c9bc88f0050bd085ed5b1e2ee3b891816a3735ae3a56365f07b079f77d2d83'),
-      (175, 0, 9, 47, 31, '5ebb0e0ad2d731542a75389e04758f8e5eea5d6485d3e84c835bb5d961118c66'),
-      (175, 3, 9, 47, 31, '50d3c55775ec794da63a89ffd6487371d1275827540323e97a4bf5a5d8cce133'),
-      (175, 6, 9, 47, 31, 'a302f423964e198a9cbf25dcc5bddb4df3aaf13fc586efb2d333fa26bcebbf36'),
-      (176, 0, 9, 48, 32, '66b0078eecbd6b5e7fc8668228fd0cffa9523ad0c8046719375113e859a60795'),
-      (176, 3, 9, 48, 32, 'b855c1c97f01a835d1c864e1fd5c72e5ccaa4ca9c55ed46c00bd3c44b1f1264f'),
-      (176, 6, 9, 48, 32, 'ca72c7bc78d2dd2eaa73cbab85d742e245c25ed73d80c4e5c7a2d7d2cb89287b'),
-      (177, 0, 9, 49, 33, 'ac32082281603e511ab07a0458d5aa7d7a2f770560e9136647e40df6a140852b'),
-      (177, 3, 9, 49, 33, '959d0ac47b91e2b3d12fb0649849ea87e139c882922664c616b9ae0b45072ffc'),
-      (177, 6, 9, 49, 33, '4c8745f598ae6e2af551c49ddc9c5799f762d505a2b7527303b309150ece87a5'),
-      (178, 0, 9, 50, 34, '17e9fa05bc58beee4e5ad48ec9587587c47fe8bd9e7807897454e6bcb555f460'),
-      (178, 3, 9, 50, 34, '267ecc087aa1e9063387f712507ea38c0e2b6979487cda1549cbe6807d4dc5ac'),
-      (178, 6, 9, 50, 34, '43353835be308681d221cf36fab8ab621ebf2ac16ba6d2d163aaaf80320b5dd7'),
-      (179, 0, 9, 51, 35, '307b0e38049a2ec51137149e77704847bdc01e81d1753fc72b6a160994d3b371'),
-      (179, 3, 9, 51, 35, 'f133f12f0f73e0b76d931e6e784d43570d4ec767841cb6c4ed810423a29d1484'),
-      (179, 6, 9, 51, 35, 'a89fb4c595ab26c63245d449bda0eb0ac77d79ae3bd91214ac29c7dc59905716'),
-      (180, 0, 9, 52, 36, '3ecdaafc7b11602f51bb4de491141d5430ac621e41b3a00ddbb4cbafa0da9808'),
-      (180, 3, 9, 52, 36, '40a10e2ba6c3eed83aae12780ecab12ddf7f3aa41186cc8a59b61809cb8290b6'),
-      (180, 6, 9, 52, 36, '2f1da7dfa5975422c8b35170215b50a7e683f60bb1370aa12d172daf6486b559'),
-      (181, 0, 9, 53, 37, 'dcb9052f06506f5c398d6b49385d225956e94df4913338a3422cf05556618d25'),
-      (181, 3, 9, 53, 37, '9a7fe91317f93000af10f020ae3bc033374af4ba2eb0e514c08bd2cc4512cb6f'),
-      (181, 6, 9, 53, 37, 'f751d8b65852b28bf2075de2c4c48f2f459ac28345e09d88e908a2b9230cdd35'),
-      (182, 0, 9, 54, 38, 'ad94272f6eb009d19d66b0cc7e6cefcc2e2c2724b14b4a516c843d4117f5c43d'),
-      (182, 3, 9, 54, 38, '5a3950e5b083d35231657f506cf47fe51d18e4990d95f5808346b83cf07423c3'),
-      (182, 6, 9, 54, 38, '32e88872f4a11cd8378db957e76a372f9a0d40fd88f29ea05312e00acb9e8ad0'),
-      (183, 0, 9, 55, 39, 'f2a5f3ee2763ecdd2814bc00b08d032020b5515c37bce3139b98fcc101e82a9d'),
-      (183, 3, 9, 55, 39, 'd38d4178f28e0eb05df863bacb1a2e9d6242b02a19c747a0768db83eedb88613'),
-      (183, 6, 9, 55, 39, '20a696b6a22e16d861d00f3d1331677a2591eb00fa287ac02c6f0c11d93a60e2'),
-      (184, 0, 9, 56, 40, '8c8aced0b731647c9400bb35bf02cdf81420bbabdfbb31495fbe6f6ebfda79b5'),
-      (184, 3, 9, 56, 40, 'db658a773351228926445ef11f9a6a595a2730409ab618b8c4d6b93e5e9b9cbf'),
-      (184, 6, 9, 56, 40, '4ddf345dd6721c5ca1d1e055f3b619e44059152e3fc15febc3b3336bfe44b47a'),
-      (185, 0, 9, 57, 41, 'f71ec99c8bfaccee75c8993f4935d66d8aa3fda12fd622609483e986ef4b1c54'),
-      (185, 3, 9, 57, 41, 'dc8b8ff63f3b281a39bd6b58cd34b2df1f821a3f511b30f2463b98a2b8295617'),
-      (185, 6, 9, 57, 41, 'c2b777ef570f0392284d044e0ba6ff5c63a4e62319ed115e7664bc09957f9b75'),
-      (186, 0, 9, 58, 42, '6a4f990596843148edde8cd776f36d83bb7b0daa66eeb64d2ddff07db968138a'),
-      (186, 3, 9, 58, 42, '95c087e32829c648e7f0b2c82f6f6f265851bb48503ca7d3ff30a69a8ed72f4c'),
-      (186, 6, 9, 58, 42, '88a5ad0abcea2dc2418ffd5fadc5f4182c5909d9a0b95aa10e0da4db8439a2db'),
-      (187, 0, 9, 59, 43, '33af2c4dbfb0dffa8a3cacfba0259a1a78299faf6420a85bea7cf632b2660d59'),
-      (187, 3, 9, 59, 43, '82c5b98e7a840bd25419f27d4bf90b2009f70a5ba041e4f3b17be4f24846bd83'),
-      (187, 6, 9, 59, 43, 'eeaeccab963a418f5bb45de305aadd2d526c7baae8fcc3e2891010366ca2883b'),
-      (188, 0, 9, 60, 44, 'bc8611c98ab49006cd9a23e6dd5b2749d17fbca39b9b477a7828dedf8d8ecf8b'),
-      (188, 3, 9, 60, 44, 'd8765be2559b9b2af8c2ed006115725bbcd7ed35a82edb2ac0b72cae0a3d78d5'),
-      (188, 6, 9, 60, 44, '4c9c819d9b2be6c0434fd75c6ab6a18c8cbd34d588a890612f71ff9702520cb7'),
-      (189, 0, 9, 61, 45, '61054aabd9255b0b9e27e4b83e1d5840a7b87808595d464018f979c84402c44a'),
-      (189, 3, 9, 61, 45, '471d43e52600250f00715113d1b97e3c307bdd32782367fc1e8026f006864abe'),
-      (189, 6, 9, 61, 45, '2ece890f7de260b754c106b54b6e87cc634cd9c37da24858cf6941db4b429f0e'),
-      (190, 0, 9, 62, 46, 'c7519e480a7d27602bc8a47be1e744a41996da7761219de3beb3694b082fec52'),
-      (190, 3, 9, 62, 46, '373accb0427566340a08ca19b06faca4e91faf96c63e77391011cf01785960e5'),
-      (190, 6, 9, 62, 46, 'd95c0525c28036be6cc19be05066fdaff6f795026922cd6c8764b4add7cae725'),
-      (191, 0, 9, 63, 47, 'd4e8200a4db7d40dcf0c1eebf8c152fa51f4099a2e052d820abf1fc3268b5e99'),
-      (191, 3, 9, 63, 47, '21727486ddaa5e3bcdeaada0c9a7810ca53a8d0cfef494890deb8936cb39a98b'),
-      (191, 6, 9, 63, 47, '0b4ae64c9a88e203ae28672c71256ce071afbddfea54de8a04b7958f5e5a64fd'),
-      (192, 0, 9, 16, 48, 'b21da1aca2129bed84b0ec8a134a3dba9ba8b9589b6cb544ae3d9d4a0389ec4d'),
-      (192, 3, 9, 16, 48, '077687d07b4dc4c8e8db116614ec65e45f5b804e9d8b8c2125f43a6d84cd7578'),
-      (192, 6, 9, 16, 48, 'd5ec8cd2d9a9ca4f817ce2575a5c5ceddb108f8f4deca17448cbe35f3b7bdd6e'),
-      (193, 0, 9, 17, 49, '37a6611d3c442b9db098a22007489cecc37ebe7baa3ca8b9406fff07641203c4'),
-      (193, 3, 9, 17, 49, 'dc1a953491ceffc5bfeba4b250cf335e61f9e5acf7ccec9c698602c495d1502d'),
-      (193, 6, 9, 17, 49, '122fca39f532622a85d8be67ce04a1541935961016ea4dc0b1fe62842461075e'),
-      (194, 0, 9, 18, 50, 'd595933d355772bcbc76c45b679e15331b1f5ed90a9eeb82b92990ad32755048'),
-      (194, 3, 9, 18, 50, '24963d4262d76b41496246efb25c5a7c4b7b2b13977e6b21ed03a457810276a5'),
-      (194, 6, 9, 18, 50, '4571302b6bd8b71e6c95a9ed6ab6c10e82eba9b88d25da6eca71c25da893860d'),
-      (195, 0, 9, 19, 51, '4e636533f79064df91abb12229aef36d9185d62136b6c7a07d0dd31b397a41ca'),
-      (195, 3, 9, 19, 51, '009c6aa586bb3cec1f6f87a60d210883030a6dd8d657d97a3fb3df655de80057'),
-      (195, 6, 9, 19, 51, '33dccc836838f6172592eda9ac151de28822e4ab8219ce25a45da295e19a79fa'),
-      (196, 0, 9, 20, 52, '621408443c9bbb93e7b4eb2fa059639a780def34fbcb888ad5365270beae7c64'),
-      (196, 3, 9, 20, 52, 'b30cb805c1b361b6c11cec409be889fb5fab543cf9c1f5089cf3b30defbc7d7d'),
-      (196, 6, 9, 20, 52, 'f7eefc6d1c9314697a88302c6c34cb3cae948b31aef54711a83b2e341e919408'),
-      (197, 0, 9, 21, 53, '61d895a98916d5ce627142b88f59e75e70cfac8c55f56553d51978c7460514eb'),
-      (197, 3, 9, 21, 53, '8c2548342b033bfc92cec5920c0f056d5cb3eb760d9c9593176c3ea65ed3de7d'),
-      (197, 6, 9, 21, 53, '5137168b2ba622130779c3e43bc9fe796048563720fcbb73ab84c18d3b5681b0'),
-      (198, 0, 9, 22, 54, '3071e8f3433f85d501a9ae93ec0658b3243fea03a46b1f34b311be6d5342da11'),
-      (198, 3, 9, 22, 54, '5083fe8d9f33bc77ecc094fdfa9ac43e074d0aa15fc49aa788e73c7076c393bd'),
-      (198, 6, 9, 22, 54, '6701de08fefdda487bb3ee82d3583acdbfc6cb74614af879e3edaeb3f093de7d'),
-      (199, 0, 9, 23, 55, '0d8c9ed72e345c80a138e07972bd9184f6745926fbd6c0406145866ce1f3d034'),
-      (199, 3, 9, 23, 55, 'cdd7f8ec2475bec5d54931c7f3ec6419ab67cd27f6a0bcf4e1b0c2e1b380cf43'),
-      (199, 6, 9, 23, 55, 'af522f6271683b4a82bee1f522b1f66c93f5a54a99b0e4561a4bd9f89a76f8ff'),
-      (200, 0, 9, 24, 16, 'dd2ae60374932ea8924ec2f0bb4f05938d58b859f9e7994dfdd99a2cb89818c6'),
-      (200, 3, 9, 24, 16, '5f0d21451e73767d53b53db833b0d773ce5b9ad1d12320127e2b3f716ab7e80d'),
-      (200, 6, 9, 24, 16, '7f376e63689b213474d3e5bbddbeb23fef096086fe16eda441bea0d418425d72'),
-      (201, 0, 9, 25, 17, 'e621cc59a48049d835c0d191dd79706998ba7d0330cedf79c9f05ea6c664c663'),
-      (201, 3, 9, 25, 17, 'a12b00dade1534de3af7ac679b8534956443226ac267bba4a5466dda3a72ca22'),
-      (201, 6, 9, 25, 17, 'd95191683df1eea8e2a5773e04ae0a0fe5dc360c4bad52699d348e24d415de65'),
-      (202, 0, 9, 26, 18, '16c4c65dfc1982edbbb9dd4e22db3e5418dc979c396d266f70547cf6433fd4ab'),
-      (202, 3, 9, 26, 18, '61ba96cc68733ba7916c68dbe61df1e4acd3c0682e4609dbb25dd9c30e60ecee'),
-      (202, 6, 9, 26, 18, '14fb5b6f8d3a07d3297dd5d5e785a1bcf8ebfb34c3abb4cbec7c02811a9b3d58'),
-      (203, 0, 9, 27, 19, '8a6a6fce27594cadf91a619bfe15861f272f58b3660094efd585d11871f5ff5d'),
-      (203, 3, 9, 27, 19, '4fa2294d4e9a23b6d773131bea5ef3856c32281f9aef5d0d93bb1afb2f1956fa'),
-      (203, 6, 9, 27, 19, '062299a64181a10f419fa1954dc7a17fc71e5473e6f289753cf9a70abda0263e'),
-      (204, 0, 9, 28, 20, '626169b423c576383e13f62339e2918cec0751bc3cb79cc2cd744c871547664d'),
-      (204, 3, 9, 28, 20, '341db0a065d9509df83ee13b211d94b99f2377cef0403b0a6d472f5a9b3accaf'),
-      (204, 6, 9, 28, 20, '9efdb30496a04f8a86bf9b4583fd4a7463917614bfa3bd2e84c0ac1b277d63ee'),
-      (205, 0, 9, 29, 21, '0fdae589dcea0cd7fcbd5689729b92d9a1313c447c0425d0bc99d44ed412c47f'),
-      (205, 3, 9, 29, 21, '1185fc2df63ff37db9f26f69c68e1b72480cb864ec6ce94d26d9242c433f701e'),
-      (205, 6, 9, 29, 21, '6e4e61995703db009498044f81c460e1c3b107f76f06988408da351363c949ea'),
-      (206, 0, 9, 30, 22, 'ee3f02a6f9c59309388ebfee97e6282976b09596e64d84d132f1106c5ec09c35'),
-      (206, 3, 9, 30, 22, '0451a510b7d38bb2321818fb784bf6992fd5396063fdf85e427a456e240b10c0'),
-      (206, 6, 9, 30, 22, '1a69085b9f9ce3d5da5afc2dfc6ca966c53178b933d813d871b0e2f52ca75429'),
-      (207, 0, 9, 31, 23, 'e80d78aea5531da0c019ec4df0623eca63ab967775920c6d74c6957bb022d665'),
-      (207, 3, 9, 31, 23, '8e5a21a86c737bc8611cd693b704dc1fe0c59ee09dd97f3a663e9b0dd25de3b2'),
-      (207, 6, 9, 31, 23, '9a20c3ed5964c21c954c216d4b0a5a0a93da6dd69a2b2b54116c7fbdcedf5f70'),
-      (208, 0, 9, 32, 24, '4b80a9c0ceee833912b21d4521cc39f87e8144c96820a8fb3e4292aaef493d4f'),
-      (208, 3, 9, 32, 24, '3f06046ea8814b41b78146604572b3d2922adf2e593e640b2b97de57731d8e9a'),
-      (208, 6, 9, 32, 24, 'de2a7585d90de23253bfe5d05487195414fbc983745ce6e17da79437d6747860'),
-      (209, 0, 9, 33, 25, '3c5d031fd21f877123a6df8b6376833ca121582b92fd72e87a9481e022cbad12'),
-      (209, 3, 9, 33, 25, 'e85f4c93d087c209071932847fe835cd9e241776bba1dfb5a3bb7d67512ea4b7'),
-      (209, 6, 9, 33, 25, '4edca250ffe50c29d42f3a7e6dfb9df07d6a7a094ccec7017c8b05ce7cfd13b4'),
-      (210, 0, 9, 34, 26, '85124242095bb59169c700737247fb8171c8bfe27eb164b887fc3e92ab394c37'),
-      (210, 3, 9, 34, 26, '7acf5f8c6c04f4b7c1b301b59ffa48859a7e12487c2e33d3dc27b0756aabff66'),
-      (210, 6, 9, 34, 26, 'ecd9fd9824f63e056dfcfd1883ce823f87780bf5999dbe0720a2b918798e7fd1'),
-      (211, 0, 9, 35, 27, '552a613adad24ac973cd2504dd66cf7e9f0b26ae70eefdf865ba1175a12c6c8d'),
-      (211, 3, 9, 35, 27, 'c59a6f883797b584f37f3519d8cd7691dccca9eb0fe9e0ec9d2624315d9d66f6'),
-      (211, 6, 9, 35, 27, 'c7d28745c8e903ffb36c31ad3f2bbb88e147e4ddc8837df1f255df9d715c1d0c'),
-      (212, 0, 9, 36, 28, '5462828950e74d275bc9671ea8f7ed024468b7f498482a89afb2fae804fa3f99'),
-      (212, 3, 9, 36, 28, '19688b23ccdd250bc3f0d37d816d1f1891bd56b4b2a9c34d75810f664ae5fa66'),
-      (212, 6, 9, 36, 28, 'cca658cdb04b87855ee09857cc4169fd42e2ee6d902df4785873a4224d21cc7e'),
-      (213, 0, 9, 37, 29, '1e14408c7aa9c74a31801aea7c756a628c0a9f1a2bc545acbd952b10b6649692'),
-      (213, 3, 9, 37, 29, '1efebe8ef8ecee8c99cb7fc61d961fdbadbdebd33872d4083cb9f855bee64425'),
-      (213, 6, 9, 37, 29, '52197e8ae9ea8770a8008348266bd331b3d71bc7aadac8984d424a20a2da61d3'),
-      (214, 0, 9, 38, 30, '0f68c88ba384c722e4e442e7dcf600efbf669439ea5dcd93e62f3965b427f77d'),
-      (214, 3, 9, 38, 30, 'ca8069856120fd53ab93928060b945524e6a2a5380b511ceefa897a6f33ba162'),
-      (214, 6, 9, 38, 30, '798b9e87acacb59ea8fac99da9e3101e97ed9ffffb058a9ce8102c69765fd374'),
-      (215, 0, 9, 39, 31, 'e220d17fa2eab6206d38d02af5f2667b4d8a2560cc8ce973f18b2c8b3fc6595d'),
-      (215, 3, 9, 39, 31, 'aca121d8d3d360d0df00fe6f566766272cf00dbf3cd397e94dc58f58901ae0c0'),
-      (215, 6, 9, 39, 31, '5bd7551316acc9aeaf8ff2936cebfdf55f9c1c3ea1723a069a545d55449296eb'),
-      (216, 0, 9, 40, 32, '58b3806c7133d5626ebb9fbc6797002adcf7dcd4cea3d8fefc2ff8e70aaf9a46'),
-      (216, 3, 9, 40, 32, '43de8ca267748e64fd88511ae0239677af6408a42da245f710c7722cf2d51137'),
-      (216, 6, 9, 40, 32, '8b9b84420cc21af1a29c8efe4c70618b27dacdbec017931ff9b2c74990d1c6a1'),
-      (217, 0, 9, 41, 33, 'f41b5fda2e38e769808004fb7d35cd79dd0e904b5f9daad84afbed617ed25592'),
-      (217, 3, 9, 41, 33, '912be506f5c47b99a2275d04ac7c2702b9cc13db0acf1bb4a992312ac405160d'),
-      (217, 6, 9, 41, 33, '591e676784fc3f45e00600f7214c82da9d815bd10bc276aeb4b1785ec8b175d2'),
-      (218, 0, 9, 42, 34, '94e722b59f5a59f159d1a9f9f13be9ce8e4d2aa88ab01363443f8b197baae1ca'),
-      (218, 3, 9, 42, 34, 'ada5104fe470f805dd4cbd274fe14c4125c4417f1608e530fd792d6efb93a5b3'),
-      (218, 6, 9, 42, 34, '2d15ef93d716360a174860693ffc1c571687e21ff224013eeeabbe43929e970a'),
-      (219, 0, 9, 43, 35, '7df74d6bf2913999b1b2a62f7cbab368648921dd9fee750c3a2ff281f88a737d'),
-      (219, 3, 9, 43, 35, 'c360dcabcf27c605aef06a2bf72cab243d8b34ff49b7642f5435d688a714bd54'),
-      (219, 6, 9, 43, 35, 'caac45c6a0f38b8e9feee5c46746b6fb6be11ec38a812526d4e20476c2601e70'),
-      (220, 0, 9, 44, 36, 'cf6da6dadd9610dd8191a042525f891d2b9599412910be27718770d7d158d675'),
-      (220, 3, 9, 44, 36, '770dd214e58abc2dfdcd419d8435553503e32c955073500fccc45b3d7d40568e'),
-      (220, 6, 9, 44, 36, '2ffa3d8a07bc6bbb3a69c7ceb53074f369ff092592eacfe81b08b14ae2de874e'),
-      (221, 0, 9, 45, 37, '384cb527946795d42cccaadae3dbd3cd8525962230245d946272ba2340a03a06'),
-      (221, 3, 9, 45, 37, '2774c5c3cf070bbe6239704b3c90773ffae86479398cd27544a8181f447b9e1b'),
-      (221, 6, 9, 45, 37, '95d997b3351558cc193d18c927bc6a467ea7d2832c86acceb3809218a99a0609'),
-      (222, 0, 9, 46, 38, '9c7dec88e7f5c4746280fa1a1a379bc125fb7cea3092027573c225ecf9c7a9b1'),
-      (222, 3, 9, 46, 38, '047a30acea1a8db63208a04f57e7194fe1fe5170448f9dbff8e0e1405e1a6fe0'),
-      (222, 6, 9, 46, 38, '29750ce1ec51189d8bf521f696ee6d9668e02a1ad6f58f0fbcf3ef07f61654ed'),
-      (223, 0, 9, 47, 39, '3b15ef06ed77133748ddc5adc0839a9b0349387b04472f8581bbbdd5df64fde3'),
-      (223, 3, 9, 47, 39, 'f46b32c863e17513ed59e0a9bd46fae42b13866e1da1c819598e827f3ec952be'),
-      (223, 6, 9, 47, 39, 'ac41f4fd421de9fd7454c338f4cd607cc33a398986fa0edf1a860fd91183a85b'),
-      (224, 0, 9, 48, 40, 'c6b0f63595d4420ab74a0f57c107025e6c228277045146e681b26a6306f5a62c'),
-      (224, 3, 9, 48, 40, 'd8d6ceced767f38c51d71489967757a346097d7558fcbf1943bcae9bcf0ca4b8'),
-      (224, 6, 9, 48, 40, '8beb88385bd1ee0a0f2606304c3035661a63e2864c6528540b28176770ed5356'),
-      (225, 0, 9, 49, 41, '5c8dc49bbb8fc7b263c79a23e7ff725c0abaf138aff748792bd76403422bcd48'),
-      (225, 3, 9, 49, 41, '9026ea4a9f0c2b05420f936be07184478a03ef4fed39e6602727aac57a5beac7'),
-      (225, 6, 9, 49, 41, '372df08777358c6c863e0e543065d7c85b0e96683b4aa93f880c70da34e4ec1c'),
-      (226, 0, 9, 50, 42, '6b834f04cc5fbc0361c75261c63e00f81fae41275e1dc9c46f0394b25cf4c10b'),
-      (226, 3, 9, 50, 42, 'ad58328e596e6bb3546d48c917b0978ea99d2957f114bed9367c95bfe246ed81'),
-      (226, 6, 9, 50, 42, '115102301828fa7e25bbf2e92a56c308e22e2c41bcb674e65809ea9a832e0eeb'),
-      (227, 0, 9, 51, 43, '564bfbaa5c00876c064c0b31b9ccec1d8082c65cef2cfa20d1d8dee57cf1b205'),
-      (227, 3, 9, 51, 43, 'd7e1d342c60985e7edba445f4937280f5d5c5310c3db042ec644ce554b8a0d32'),
-      (227, 6, 9, 51, 43, '3e00a60e13311b6f403c79f04dc9294dff6c0652cb125bca5930eb95beffae95'),
-      (228, 0, 9, 52, 44, '9d6a3b67a87354064a75cb916b1ef04a5996f8ec0c69810f1c2ac42caa7d9db9'),
-      (228, 3, 9, 52, 44, '2751f0ce6f2261957cde6ffa18247ead464011b6c497bcd0e74a73b59ee13492'),
-      (228, 6, 9, 52, 44, '2616581d8eb9c724e8b9f8160e4d7b8179a452e0339d226aa43f34ae1c2b8760'),
-      (229, 0, 9, 53, 45, '6d5f73e86cf42990296d8afc083dc7b06dc6c34b36341410901c2479c61fb6ed'),
-      (229, 3, 9, 53, 45, 'a16842a2f0d3cc06771d0f80dc78da40b73d8b396ecc7d3f208999b5c99fdeba'),
-      (229, 6, 9, 53, 45, '27362542baa014308ec8d1b92e8a473cd68308933c39fab8edab587a5fe6df47'),
-      (230, 0, 9, 54, 46, '000649c18eb0dbbeb65bfc75859734937592c0cafa70ae93773487d4b41d0f6e'),
-      (230, 3, 9, 54, 46, '8fe265d76af9b9873fb18ac9c93d6bbe0983e1827b82d7fea782fce26ea59829'),
-      (230, 6, 9, 54, 46, '9c135f3270a390f0cb78ecebbb504cb1a4c11d9d3bdcc024280023ddb574cdcb'),
-      (231, 0, 9, 55, 47, '48bf9e055aa1838f2125b557fbcd8ae06f6beda7ef1ff1a57b3a74705ec87ffe'),
-      (231, 3, 9, 55, 47, '47a909d9cb69dff56e45cc72818149719881ff98a134a1e9d25d31e7afd83342'),
-      (231, 6, 9, 55, 47, '435092954e82cc9317dd02722d5d7b6602bd7848fd72364099a845b8fcf9d7cf'),
-      (232, 0, 9, 56, 48, '9ca7678e5dd78e555c1da2b3e42f3933e7650a412f378e47a84560c5ddeb5183'),
-      (232, 3, 9, 56, 48, '2d840dbe32d6b6c4a088ef8fb9dbc01907dfc34368383a3f9a6100474fb1e744'),
-      (232, 6, 9, 56, 48, '2499a30ae6d7d85f01d6793e11f5eadbd28058d2104a2e40b4231034863db45d'),
-      (233, 0, 9, 57, 49, '4afa6e943bf8b5a3f8ea5622000cc4f6c41564bf3a940dc0e5309fda0b44957b'),
-      (233, 3, 9, 57, 49, '2b9817fdd216efee5cda37cbc1ba197fba868725fb902ddd5dcd7ded7739bc7f'),
-      (233, 6, 9, 57, 49, 'dfe47642dd6160d7eed10498d5b1791be90947419e86a1e0f57552c575ce53ef'),
-      (234, 0, 9, 58, 50, 'bda264baa7126ad97cff34cfa2d6e1bdadc293c9b92113ee5d89378e2bc30533'),
-      (234, 3, 9, 58, 50, '3fb1a678a71eae2f46786a20bf4f991e15e295a458cee236806cd74bfb2b5969'),
-      (234, 6, 9, 58, 50, '590f8a222e555a8fdb8122992b06d4523c2fd7b13ef8320d02c2a7491b710081'),
-      (235, 0, 9, 59, 51, 'ff3849a090d5c46f90603f23295a43184e0d3fa5e57c397a4e2f79cf965c10ed'),
-      (235, 3, 9, 59, 51, '408b8337a05b27c80a7669636a55be5f03be46ab37d3afaf96f9e1e6f1be2799'),
-      (235, 6, 9, 59, 51, '5257144d7e3c51927b4d4294842d2464cc84fd3add87eeca3fa4433ad3aea65a'),
-      (236, 0, 9, 60, 52, 'dd06e20d2943d3e3b6d66f610f3920dad9f3c991bcab3378f9b831b5130a9b88'),
-      (236, 3, 9, 60, 52, '7b40287fdfeede9c714617830b9669a367b1d1dc4aaedcdd9b093d6f0485ddfd'),
-      (236, 6, 9, 60, 52, '99272dd3f81970d37bcf513798b185e8814bf7aaa85d424e141763c0d56b9308'),
-      (237, 0, 9, 61, 53, '5391a84161c686442b855de69fbfad4e3fa6d73c35c7ef6643d341326bb2fab7'),
-      (237, 3, 9, 61, 53, 'cc7b054b32594152e84678c3888af62977e5069b371fa32e70a744f268cbbb0a'),
-      (237, 6, 9, 61, 53, 'f841c03bf5f4bde1a1ea1eb8590296cc0f351d50429a9b53ece3846f572d4028'),
-      (238, 0, 9, 62, 54, '6b9daf4919308f779c4bc609711d2c16497ef3df03e097a07bcc76e66cf79710'),
-      (238, 3, 9, 62, 54, '3ecd6be68fcf2c8dc46c2f37816e9dccde8e3bcf02b0ad33b09087dc965ce5c8'),
-      (238, 6, 9, 62, 54, '5fa37f9dd8420d484b6ffab0b92a44d2dd09a5c31777825a81a3aa7c0bc75567'),
-      (239, 0, 9, 63, 55, 'f90316a1360afe18f1f9eb35a8da6e8009f734170088514d9e526c20e2ba1ea4'),
-      (239, 3, 9, 63, 55, '61e51e3e80f16da1e5c724137aa52a7b983c721dd1d9f4fb502aadf956b1d338'),
-      (239, 6, 9, 63, 55, '54dd1a09088fa043c42f23d8a71af4b984e6e3f6c73a1250a36c52113303096f'),
-      (240, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (240, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (240, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (241, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (241, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (241, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (242, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (242, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (242, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (243, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (243, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (243, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (244, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (244, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (244, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (245, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (245, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (245, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (246, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (246, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (246, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (247, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (247, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (247, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (248, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (248, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (248, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (249, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (249, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (249, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (250, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (250, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (250, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (251, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (251, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (251, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (252, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (252, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (252, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (253, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (253, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (253, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (254, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (254, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (254, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (255, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (255, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (255, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (256, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (256, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (256, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (257, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (257, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (257, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (258, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (258, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (258, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (259, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (259, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (259, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-      (260, 0, 9, 36, 36, '8e2267d9d5b3887b3155ac1c3ea2f23f34ef2072b48e7ea2a0e2d826699767e1'),
-      (260, 3, 9, 36, 36, '432f1b390e55ce9e52fde23ef3fac4deb7394d7746e84bb34b7a7fb14b40ae80'),
-      (260, 6, 9, 36, 36, '39b419cf935494540e712c2622589962f429f793305e8f1e9b6cc92a28b89701'),
-      (261, 0, 9, 37, 37, 'bef64838d49ccada5c0b459946c321cd91b0d897895270bab0e69bfe0a1c4186'),
-      (261, 3, 9, 37, 37, '241c1b8b05fbfa04d04ca702ef9491ba58d0f3b4dff52734abe5ef94cd9b9636'),
-      (261, 6, 9, 37, 37, '09fba7228703b4160dd29da3ce6a4715ff93a9c0003b670d550cb73baf034701'),
-      (262, 0, 9, 38, 38, '932db3e008ec4488ce17287f81170a7862796c650dc271cae7b0f70261dfa27d'),
-      (262, 3, 9, 38, 38, '33740f21df6eac2624d9e188ca5356ef20cee44befb496fbbb2ff0a3fe28e0aa'),
-      (262, 6, 9, 38, 38, 'cf86939424e249d6d07439c7fb5c996d689ae057b644d93c8b51dc59058774ff'),
-      (263, 0, 9, 39, 39, 'c2ce2172256dcee2e4c13d86684c37b9d633ea43599b80ee81d4a6019ffd5e80'),
-      (263, 3, 9, 39, 39, 'cba1c95fc94d5f06eb313e51bcdc6b9ab1548bf551d41b2480332795de8d2adb'),
-      (263, 6, 9, 39, 39, '7985683d280f5b4a6bb910f562537a093498bc76a447c0370dabcc5d8e3dfa3c'),
-      (264, 0, 9, 40, 40, 'ff657e41afc635ff08e0a4abab525368043258df941e1d2ed25b482b096e7824'),
-      (264, 3, 9, 40, 40, '761c108367f657b8089192b9a22176fd36d287c590d6a8b437880243809e0d90'),
-      (264, 6, 9, 40, 40, '7bd196b5358ead0a4538348c04a26344c35fadc8c083a6f86ac6d6c0a4ab8c3e'),
-      (265, 0, 9, 41, 41, 'a24bb88ed1a55a5eb96dabaa64525de563901413639d240e6151c9eedbcf231e'),
-      (265, 3, 9, 41, 41, 'c588f878a531db49cf9ea0e87876003a55452529365538955d3ab42782be47b2'),
-      (265, 6, 9, 41, 41, '1a821f7233989043862206aa25bd30504a8dde18a20032e24493a657eb2ae036'),
-      (266, 0, 9, 42, 42, 'd02923e877543df074b5efdf26a5b8065101abd185d5916d59c6a67e54a7177b'),
-      (266, 3, 9, 42, 42, '84a50ba70c76060f329e1b22071ddecc8803f7ab083bd899c5c96218ab0c93f2'),
-      (266, 6, 9, 42, 42, '1a6b741e8e1846f896fee954e422b48c30639cb0c050e50337b8e646f457e8b3'),
-      (267, 0, 9, 43, 43, '2c701d56941329b13669a9d35fcf15aca518194cf8c9bf23be10ea1fac68da93'),
-      (267, 3, 9, 43, 43, 'd1dde2f7cb06e0b1eac1c0a0fd44edbf50ab53cf2bdd94e97aede3c0e7ae5ca2'),
-      (267, 6, 9, 43, 43, '194bb921b71faf4154cc3145afc1652ee1f5cbb5271b59bf36a44c18954bd51e'),
-      (268, 0, 9, 44, 44, '157387272447ffa6bd4dffe247f0a8ed6cced1afefbe294e9759207dfa928edd'),
-      (268, 3, 9, 44, 44, '6032306c5855632d26d21d5e523146db323d322d52ad96ad13b815529cd55906'),
-      (268, 6, 9, 44, 44, '1e58ef598b916f1092d2a576204324d9628736711610d4d8b28faa69a398565b'),
-      (269, 0, 9, 45, 45, '8ef00e70eec04188432ee3cdf06aaf5f8a70b67d746d723e779e37cf255e7e57'),
-      (269, 3, 9, 45, 45, '47beb753ca5d22996f2613d216851657dbd32346eb8b8ecfde77ba2a3e475305'),
-      (269, 6, 9, 45, 45, '03721557b78b5fa383d9c81488ab24b7d033bd1b53537ff6ae9de9a487ee23e0'),
-      (270, 0, 9, 46, 46, '1a503cf36668310c171d3b1908e16af2c79525648d470c3247d49286fa13c474'),
-      (270, 3, 9, 46, 46, 'bf86ce3aaba71a7d0e823339d11d52e5db6adfa69c00c5896eafe9a5cd73efdc'),
-      (270, 6, 9, 46, 46, 'a38f000d6474d7208c6a5c0ac176a4b9173c9b8759a42f748ad1dbaafc48ddf2'),
-      (271, 0, 9, 47, 47, 'e01c89ddf285a808cc59dd30341979021e680880c09128e56646893853f8c8a4'),
-      (271, 3, 9, 47, 47, '08f7f319765523f1f252f09c4922d7b5f4ab489430167fa3a1670511fa1c12f5'),
-      (271, 6, 9, 47, 47, 'acf788970d3826a2e336da1830c3cb3f47bb8bac47549f9b3117cf2fac70496b'),
-      (272, 0, 9, 48, 48, 'd93da555eaaa95d22d99ac77e1940624cfb87dccbd77c719d4068ff71c6a9782'),
-      (272, 3, 9, 48, 48, '957078a4fe289fe09f3fa9e029d1f3b8e0208bd91719f02efd9309b7d0cbc416'),
-      (272, 6, 9, 48, 48, '03384c23f91a22d72bd94aaf4248f2403f50ba91d87e947ed3666567f488b81e'),
-      (273, 0, 9, 49, 49, '539a2fccef6a006d4f517540d56793e9be1341e8dd53341ed41913342e849d1a'),
-      (273, 3, 9, 49, 49, 'a82f9b8d65fec085550f13f943c37066e8b72acd26315964a86c58bebe5a5857'),
-      (273, 6, 9, 49, 49, 'cb96c5e3e5b63b442382f3c877dc48348a7bec99a68335dffc065ca75007cfd7'),
-      (274, 0, 9, 50, 50, '34d6781cf6e48453714e57f44273cea8073587187cbfa582df2772fd4b05b0ab'),
-      (274, 3, 9, 50, 50, '463b64415db029d7e867b9737f8f9dd1dc652abe7c304ac64d5729246c476873'),
-      (274, 6, 9, 50, 50, '12a31686a0dfe8c4eb3e3c63c791513289192576981c081066ac8bdcbe711d37'),
-      (275, 0, 9, 51, 51, 'af5d49e6e42328128857a3cb3b064c14ffaf680b2ddc27243719988f6cf970e2'),
-      (275, 3, 9, 51, 51, 'e2dd68fb3381d341bee0fa68583b558387027067ef9f83bb8cbc6d0dcb01ff7a'),
-      (275, 6, 9, 51, 51, 'd1aa44c84feea301ddfcaaaca1f6b381870bf6b6fadef66b3eb6bb1eb3e8a540'),
-      (276, 0, 9, 52, 52, '1eb2e7bc51fd9dfb1ea02c1675f784efa7087855c1f791fd4bd92d99aa2f99a5'),
-      (276, 3, 9, 52, 52, '23026a91ce87e0f535091463b23cd61ce28ff13ebf0c0bbdfdf77cd30c2870d9'),
-      (276, 6, 9, 52, 52, '5a8d6e7eb10c094ec82bc6b1e7ccf4b35f0443a6c2cd39bbe79103869999505f'),
-      (277, 0, 9, 53, 53, 'a7db595a870b83d019aefa8bf1f01f20337b958339196e91e7c2c75ae51f65ec'),
-      (277, 3, 9, 53, 53, 'bc08b1743c518314df8c9fda918f9ea908fe9afb45910dcc51222a1ccffd6e66'),
-      (277, 6, 9, 53, 53, '1056d0defff8c1ad62c6444c15a6887fc7fd388c807a8e2b1870ad7542c68b09'),
-      (278, 0, 9, 54, 54, '2afa136a26802e24f52b6f99fc0d9636ffd4e07a2c360def977954cdfeaae085'),
-      (278, 3, 9, 54, 54, '24a1f9c8c571c1d034b5a5e0925ccefdcc0bf291b51da8179e8dbd55767b0750'),
-      (278, 6, 9, 54, 54, 'bd0a89ed8e89b12f8a6d0715b2680cd54f41bbe63af38f6974df40bfe7a1546e'),
-      (279, 0, 9, 55, 55, 'c089c997ea965416b0fda611986b9032fc64d0078e2e7a63ab02070ed4d4e06e'),
-      (279, 3, 9, 55, 55, '232dbf89d0e92fec24a30c84cedf3313b8e8c451f22104c11a1c4377e571771c'),
-      (279, 6, 9, 55, 55, '2628bccfc229f0b8b998c5b4a0321f83c6f62d31785d21bddf4256f7e851c7ea'),
-      (280, 0, 9, 56, 16, 'b376679df70fc00756fc58803d1182a2433e3d48dca46271be119e682a843661'),
-      (280, 3, 9, 56, 16, '4d543005d7875e425292ab3a03a1cbd3716628ce1219913a423f6950673685d0'),
-      (280, 6, 9, 56, 16, 'b0c6e0033f1f2eb09f7017c7bef99d3905094878d51af055bd72a05e91f84771'),
-      (281, 0, 9, 57, 17, '8dbdb21b6a2067abed2697673eb4048d44ec0ac7eaf1e7972265e7718c2461c7'),
-      (281, 3, 9, 57, 17, '9dadbce8af6f63dc28c75eb5e8f70b0973a891a715b3e3ca9265cee2ec1119ec'),
-      (281, 6, 9, 57, 17, '5c37df3c677e90e8e4b8ad760e7a9d7122e49e5f8403b2b369e2c331a15bedfb'),
-      (282, 0, 9, 58, 18, '2088f95afb21412ce9b2c985617aaaea649044d5562ac6752df8770d3c76134d'),
-      (282, 3, 9, 58, 18, 'd110b9607622a23592b492b42e0ccebd9328b25914e4f61480a088dfd8473d7a'),
-      (282, 6, 9, 58, 18, '331ee14ea9e707bc7de301bcfa7368e21fe45aaaae3ace7c7532086dac16f80a'),
-      (283, 0, 9, 59, 19, 'e84e34dc4b0f15c87307052d7aa48d70a851cfa796e8801cbc2c4d576cad97e9'),
-      (283, 3, 9, 59, 19, 'dbc3a5cb51ab019ba1ec9dd841bc5584c5ffdbf99373f187e0386694680dff96'),
-      (283, 6, 9, 59, 19, 'aa1a6c4ee7805d4fb8bfb8723e715a1679c26189043dc0de91a3432b97274e0c'),
-      (284, 0, 9, 60, 20, 'aa3cda610485f81e633e41b84f8b108da189337596527d7e82b65144132e311c'),
-      (284, 3, 9, 60, 20, '0b249ef8a0a61392989855f01aada4462728d4cdc34147165767a1a2b66d4d38'),
-      (284, 6, 9, 60, 20, 'f023a645b65fc073fddad85eb2a7fdb011b49acb4e00f69c1d4a7cace4b6e809'),
-      (285, 0, 9, 61, 21, 'faccdb6c764dd6e266bd72bacb2fb3443f8b79dbc220513d13c914da52d79cfc'),
-      (285, 3, 9, 61, 21, 'b7e9bb82ffbdba377a7d80d6d50c2b245134028581e8788ff73cf6673398c903'),
-      (285, 6, 9, 61, 21, '535d009cf1eb24cd490dc0b9372b61653ced07f533cb4d0aacb0badf6a182ec7'),
-      (286, 0, 9, 62, 22, '6fe1806e79856aad39ff3a3ec3da326f3ed3f76013d34d7078763f44d62593f5'),
-      (286, 3, 9, 62, 22, '61fce86c9ee6f09b00a6970e9ce448658aa4efc70d9dc52b69e214fb11803983'),
-      (286, 6, 9, 62, 22, '9154d0d1abe116a73cf1ce17f90261f32a4ee82b47f1bfa0968c394b8de314cf'),
-      (287, 0, 9, 63, 23, '7af875c080872235b2f205194d12085ea60120beae0c46e90a78aabb2611da97'),
-      (287, 3, 9, 63, 23, 'c8dc468cb50f3c5c32299b5ecf5ac7857b3e80b712dc5545a1b896681be505e0'),
-      (287, 6, 9, 63, 23, '0b883d0b25e89f03d7a899473a8a663fe54fccd66ff0220c2f88c8328fead8e6'),
-      (288, 0, 9, 16, 24, 'fa7613f84cde3ebc469a327e00ae772a647f3e6c0237e368e1d7e42cb3f67c3a'),
-      (288, 3, 9, 16, 24, 'bdbc57a5a5ec359cf039e38c83adfed0f84dd6b0dc365d29b24d8458b88ecf4c'),
-      (288, 6, 9, 16, 24, '551dd18d551dac9be38b64395d45c5f7c7b3d1f1845097623fbaaa32c6a25f17'),
-      (289, 0, 9, 17, 25, '5abdd05bcd748098c718c61b74ffca55333bc9eee7b0b2c86a3e3ca05a29942c'),
-      (289, 3, 9, 17, 25, '0a515ea12cc55129593e6b7c30ccc3007373568db556c065e7f4987e94ea4876'),
-      (289, 6, 9, 17, 25, '435bd382ddc22bdc3ba6761c69bb52dd92939dbe748e41947228cdaf5e805b53'),
-      (290, 0, 9, 18, 26, '96119b1e8840431f42dd80a1d129f9a79ed0bfde6665f41103b569c15915d38a'),
-      (290, 3, 9, 18, 26, '1ec0b9fec820dd6fbd77d825f9071bc8a1a793f2c714a7b539f8dd3e2aaab462'),
-      (290, 6, 9, 18, 26, 'b0ae413da840ed115d4339db976ce9234b1c570a074d56ffb2a3a2cf2f036fa0'),
-      (291, 0, 9, 19, 27, '6adf155578c74ab47ebb50eaa9011dc017a6137c27ef5f987072d9c3012b9994'),
-      (291, 3, 9, 19, 27, '910e3f298620d5a8ded66f57032b78f4dd0a202b63578f44a72a9d2d67bf6190'),
-      (291, 6, 9, 19, 27, '3db85052a1f54481fea8cbacd6713b18702ebed1d20e96b22581133e49361b20'),
-      (292, 0, 9, 20, 28, '158218014d9bc35b565f0beeb974d059a49c86d31dd24d913d68ad4068fabe7c'),
-      (292, 3, 9, 20, 28, '08473f986441151a57de1e006b02b414d740a3d3ccc4a27999473f11491a3df1'),
-      (292, 6, 9, 20, 28, '10feec623acf88e22a0a8af7ccc1e7d21438c8f2f710c9871da12055a9ec65e2'),
-      (293, 0, 9, 21, 29, '7285a406223a2da3dc6452830c784aaf381c2bef887f1196044cbfb06e0f732a'),
-      (293, 3, 9, 21, 29, '3c3069bfea3f89c3b74150b0de54390cd514378eedefa8b07833671224df9256'),
-      (293, 6, 9, 21, 29, 'fa71f023cdffb2acd89235125df9a67c0914a96a71b44aa465eb6fc910451f59'),
-      (294, 0, 9, 22, 30, '5b394734dc67f65463477f9b02eebe1671a68ec7b2e55f544156c8e46507ae3a'),
-      (294, 3, 9, 22, 30, '519e294008074f9ad42dc74bff6ab7d6588b6fe46c2c8fd3a34e203a63b2a4d1'),
-      (294, 6, 9, 22, 30, '16f4ba5e3fd30dd411293cb1c15b6e2e186e635d8f9500296a894690bf879934'),
-      (295, 0, 9, 23, 31, '1228f32113a078f587e18326bc8b8409ab1abc73562c13931d0d3767ba77145b'),
-      (295, 3, 9, 23, 31, '3bc7bfd72caba3ce4b90d8d8c22b115871cc4c8316e40d111f88bf9531c48007'),
-      (295, 6, 9, 23, 31, '9b46b7204bbd0c878e892518cdee8fc9c4055b98219dd2fe9147f68068f66034'),
-      (296, 0, 9, 24, 32, '0bed753309d414baf564eda241fa1627575927c7efe92552f3fb9956a4297649'),
-      (296, 3, 9, 24, 32, 'e6ec2966f5cf0fcfe201f5762dbdcf2c4ec3e3dc2ca2e70d7665e295e069c1b6'),
-      (296, 6, 9, 24, 32, '04be33115728d25d8b89ae08c6073a6043c14e79a83b9596b08efad545f71f31'),
-      (297, 0, 9, 25, 33, '9fa91f3fce7341843e48ceace516bd08da710e7cf5074fcfe51f12377db13438'),
-      (297, 3, 9, 25, 33, 'd9b271d5a067594a6dfc1170e1a60c9aa5bd473e2982333b7bc26980724bc377'),
-      (297, 6, 9, 25, 33, 'eac2961ea609f2e6eafe50368faeb46d2da765fc609edfba69278b2c03f59bec'),
-      (298, 0, 9, 26, 34, '5e96039dcfc56f38422a36c03cfb810642de6df810825ec6e358e88ab0e8cd2b'),
-      (298, 3, 9, 26, 34, 'd35bcbee9d2fc86f3f2e290e0bf5d6deeaef42f9adf25713239cc5c4ea4bf394'),
-      (298, 6, 9, 26, 34, '1bab0d37e7f0098941e372ef4a45d413e7cfa8cc01760cd3c38ad7a57edda867'),
-      (299, 0, 9, 27, 35, 'ca9800db715e24bad76ffcfa973242dd0b9eb7d73b51f1faceb69c412a0c5e4f'),
-      (299, 3, 9, 27, 35, '9ff75062bbca0570cb8e72ac45332ab80e71ede5d964b67a784ef73e9c90b392'),
-      (299, 6, 9, 27, 35, '8265c450c7daff3c1e9778d11a048190222975ccb6129a0783feec0f2fa54174'),
-      (300, 0, 9, 28, 36, 'a721509c60a5a76bbbc11ceb92823f21b2b9f5fd000d18c602f715221b903ef9'),
-      (300, 3, 9, 28, 36, 'dcbd9ca2e1781415b9ec5788e690863dea5612664beaff3389e5e1d892f4890f'),
-      (300, 6, 9, 28, 36, '3fb5156ccd5583ad79c81cdab97382c2c899e4ae2039083f67c302e5315aac24'),
-      (301, 0, 9, 29, 37, '9a2a7d7b54434c1d86c9efde7c86fbcc29a4e3d0d19d1cdb3c836347871022cc'),
-      (301, 3, 9, 29, 37, '557249e1ead2188dff8329ae26849535dc10c872ddb651cfab353c18cb5af861'),
-      (301, 6, 9, 29, 37, 'c54227ad4c58c39eac0572bf59d3a8b514b63ba4402bf71ec9e694607f8b9863'),
-      (302, 0, 9, 30, 38, '4ff3e54d4aa752cfd3e6a06dad92c426134708b684b1104ffce983f893a92a96'),
-      (302, 3, 9, 30, 38, '2b59123ef34cc7b768662a4dfb039c8500a6accadd58434fb8fca082b6ac2e20'),
-      (302, 6, 9, 30, 38, '6245c6d5ec6c392fdaba7c4e19e4f5c278d72be9329137fd56724ea22e98c203'),
-      (303, 0, 9, 31, 39, '23cbe3b187375fc3d87f8e548fae99c6badebe003507437099d575f75cd114ba'),
-      (303, 3, 9, 31, 39, '4ae5f7b939a9a9156c3b42494f32aa3b127228c5eac6e2a804b189cb25a02b56'),
-      (303, 6, 9, 31, 39, 'af803631fc1cde9efa98cbf705afc2401f5762407a2300737558885d748e315a'),
-      (304, 0, 9, 32, 40, '1750967e9c5a103616d7403621019ae76be133a01c1dd6e05d511f80e7fbc43b'),
-      (304, 3, 9, 32, 40, '1869a6de2f4a0514bfd241989aaf2e2489aaeab26229e467ecc3af353ab0e296'),
-      (304, 6, 9, 32, 40, '4b3a8f5b5b90bf596267168561aa67b7429390fc1fdf256ecce0f8101c5d1c05'),
-      (305, 0, 9, 33, 41, '86b9a854c26d65d8654ad4bdf99e3af46736cfd2aa52f31441600863e48990dc'),
-      (305, 3, 9, 33, 41, '68e6a246a467baf89b5b52ba998b1292e42f4388825e3ad9c492fe31b83f0646'),
-      (305, 6, 9, 33, 41, 'fb2389d1698d4971c1d05d5c4bcdf88489b9836f60107ccba830c8509c0cab8f'),
-      (306, 0, 9, 34, 42, '55a4a359e245c8ccbc9c3772073270ff80c0829cc453ba359c3ac62bacd47fe7'),
-      (306, 3, 9, 34, 42, 'b1af01c8b3fad6f922583311a6611fec0d4900bece3776823174ba33b6d15bfa'),
-      (306, 6, 9, 34, 42, 'c32cb8b4b586513d2c4e25b007bc16a85931b665b2bb3ab723c7a6f78290bd21'),
-      (307, 0, 9, 35, 43, 'a9e9f34f84af6a9cea23e5a4e310b41452200a621904f3c45cd3ec9ec6c2a07e'),
-      (307, 3, 9, 35, 43, '39f36f3bbad047e2d06a68dc681ac6cae46dac9b18ebf8c7a76e663150faf64c'),
-      (307, 6, 9, 35, 43, '06bc29c869a670058d994e6f0ed24ab5f98cdf3a3ca35d78cf9424170f16e179'),
-      (308, 0, 9, 36, 44, 'ed7b3a76d5d4447aee2fd7e5f638ffdfe172c0acbc7534a07a6a5c93d972de31'),
-      (308, 3, 9, 36, 44, 'ad14d7cf62a608b0e3d5e8a8ef5335c202a66f1c21d6a232879d44138cad3a97'),
-      (308, 6, 9, 36, 44, '6bc089f90d6103029d4ae2b126ef8476c274963a31408b6b93339a1ef54e2a9f'),
-      (309, 0, 9, 37, 45, '631293f717c19489de28ce1175cbca7a0fb9abf3c09bb81ef183233c11b26cdf'),
-      (309, 3, 9, 37, 45, 'c975fe95a7bfd2f74c875d837734ed3667f39b1300ce1aafa5057e60f8a0d88b'),
-      (309, 6, 9, 37, 45, '9c6f116cbe663819ab933cb56929febe0abaf7162f829cb775afd2f81843d071'),
-      (310, 0, 9, 38, 46, '5527ae914e2126800cc79f48aa56d9c76d2ddb552fcfb3ae66ebd0ca51987d36'),
-      (310, 3, 9, 38, 46, '8ea93bb7643fafec8cdd413bed5bb4dbd93e82aad39bbfed57cfbf600e192d8d'),
-      (310, 6, 9, 38, 46, '95815902def3109dec348d5c3f555e892ea3e582ef76cc32536bb1ff3ae7d4e5'),
-      (311, 0, 9, 39, 47, '6b1cfbcfa532f8898f2d99d3d38aaee417d58821cb2ee92f26ff227c89d58098'),
-      (311, 3, 9, 39, 47, 'e59862b0e0a0919b461b8e5c8ed9f92a8eb31bf02b85bef3e16ad8dd0bd54708'),
-      (311, 6, 9, 39, 47, '4153c2d5395c62374155b9b909c74ae11b55032828aac63b829b41dcff9af35f'),
-      (312, 0, 9, 40, 48, '7a3741d4252b0c352794df060203a360ddadc1fb363dbdb720a9efe2906105b0'),
-      (312, 3, 9, 40, 48, '0a4441d6c8e8601e606cc0454e7600f31f7a64632bf5e44219be212738a37d5d'),
-      (312, 6, 9, 40, 48, '6805870ac7e60a876631532cc7bce5982c74134d1c8af3da7e58782852d2a4e9'),
-      (313, 0, 9, 41, 49, '1d477fa13cd4bd445fd3cc38c991a0734855f73a6d7f3e519f74a8ece74417b0'),
-      (313, 3, 9, 41, 49, 'f6154934c8b1f716d6515a21f04263672290f3e3f9dcb7bea1d9a4ee2e50bb88'),
-      (313, 6, 9, 41, 49, '230f130df28fd8b3e99d71cfac09f75c0e7a9c50fe58111d08c856220b44302e'),
-      (314, 0, 9, 42, 50, '6ee3f1907452b3fb351a67e03f0f26467ee9092bc863bbf7dc2b6d51ad22156e'),
-      (314, 3, 9, 42, 50, '36405d492e6ae0b4d51d9f37fb0808c123847ac16fc00a8ec93e90e5592d9c38'),
-      (314, 6, 9, 42, 50, '2feda3a79b8f5af2ff3c02b2c4ece79259e3d2c2c4dc764bdd30adafb7519a33'),
-      (315, 0, 9, 43, 51, '4534838c832844fe65fd20a583cb1240d39c5969ed1b63ec6fc30b5dafaf973b'),
-      (315, 3, 9, 43, 51, '44f50763ee5d47b7bca02d7b94d01fa6c35ecc9d4e56df299cb9a9c265e191e0'),
-      (315, 6, 9, 43, 51, 'd3a61c9691cf1c18c7fd662cc2f18238996700fff7d0edcfebaa700cd6618de3'),
-      (316, 0, 9, 44, 52, '39e908402c9f8c5781fb47469d1bf746c14d704786a0825fb3d4c46271a08684'),
-      (316, 3, 9, 44, 52, '38f871d78fe138bd2b9304d7b5362125a930d5afb85a37a2bbf38f19d12832b2'),
-      (316, 6, 9, 44, 52, '01eb702da8e48cedf2a8a861b3beb6144df28ded2bfc71774543428f56721cef'),
-      (317, 0, 9, 45, 53, '9d91d3a1120fc0c7da8b222f566ccd0ecafd3dc16f662b72c204c776b2f5f358'),
-      (317, 3, 9, 45, 53, '8978687db0957c1dbe3353c42d640d1fb76f914f979fda768169d74f8abc194b'),
-      (317, 6, 9, 45, 53, 'fb3f7566ebc87105e321fa8de4f59eb25daff8691a15e2536dca631ceee8cea6'),
-      (318, 0, 9, 46, 54, '23f22dcc3235881a3940b7cdec6792c0f053427a694747f21514d6b225d166b1'),
-      (318, 3, 9, 46, 54, '35cd228b4bf0cbbff96f478bae471028c10a9f271722e339801a4775c7015f80'),
-      (318, 6, 9, 46, 54, 'd203e4aa1b587fa319cbf87a6513a545e50f528531a7157ad42146514580ad17'),
-      (319, 0, 9, 47, 55, '5d21989acc6889569ea553064b9958d6ffeff82c2de85421f8599dea49a7e476'),
-      (319, 3, 9, 47, 55, '6274a2314b4f78e210dfe3965dd1a7ea7f82b8a844e4bc57ea28fb079185dc7e'),
-      (319, 6, 9, 47, 55, 'ce9fd857c4fe0586637b0c340d1ffe96e56a2132d746aef60585df8afffb8882'),
-      (320, 0, 9, 48, 16, '68f020bf50aeb00a04872f04f8f39d8f7d470e935f2e061e597543360596bff7'),
-      (320, 3, 9, 48, 16, '62f15caca5ef32d7250ab7849f9a138fe4dafdd45ec00f80df6631151e4e3691'),
-      (320, 6, 9, 48, 16, 'eb90e0dc55b1f8a9f7b7569b33d09097c2b9a61d0b5851048f39e858a5212fbb'),
-      (321, 0, 9, 49, 17, 'f79722e8faaa8aa36746b6d5a54ca9b221fce31f73c69616440bfb049e87f7f1'),
-      (321, 3, 9, 49, 17, 'bb62010e5365f8f0798c858e87115abedb9f459f9f11c4ab9eca27b76d1cc971'),
-      (321, 6, 9, 49, 17, 'e9d681fc1a63d3115296d197818fa99f21ff6a2ce05a4435b9093c3b3c437936'),
-      (322, 0, 9, 50, 18, '819fffa21e32a5c32c37ec00a2ee326bf5dfe25d76e43c7c2b649a12b80c95e3'),
-      (322, 3, 9, 50, 18, 'ad3255bc87eb4ecef869bd7de9ef177b86a9951a8aad6f37c9287401b4ac1473'),
-      (322, 6, 9, 50, 18, '6f348e9aff6799d3e5beba62ceaa1c1f31428e06d1a9dc18bd5bf364c0f0241e'),
-      (323, 0, 9, 51, 19, '7ea0d1349fbd6e31d562b2c8486cd4e73df3daf1c8c63ba8a16382792fcc84a8'),
-      (323, 3, 9, 51, 19, '24c00a9f3d4b11b2e1a83d32704c37a6e1b5e569e488dcf7dcc4b17805765d6d'),
-      (323, 6, 9, 51, 19, 'ade93aed7fc55e4b08f7c2fa875ff415826b763bdc6d416c52b4617f1200e34c'),
-      (324, 0, 9, 52, 20, 'c9750fd71d827678dfe81b55d6ef17c12453ee0eb05c8acb487bec6791052322'),
-      (324, 3, 9, 52, 20, '219de635026f0f4a07fbd7b687ca70b37f1d1e38686cf770431271a276b700f5'),
-      (324, 6, 9, 52, 20, '53c40a9aa597d7e0009de790a9c6a3c575df9d5a9c200368c1a0f2e5a3c3d9c6'),
-      (325, 0, 9, 53, 21, 'c23e6e1b28206ee891f6e2f0c17a1152ba4b62f991f540acc3876b78ab579950'),
-      (325, 3, 9, 53, 21, '50aaec1f20c6d18d26fc2d4967af3d30942dcfb4819f3e302eeeef19974751ca'),
-      (325, 6, 9, 53, 21, '133c7672751a1bc26e5549b812dda65f0a3fe746f48b952cba06d3d29abf867e'),
-      (326, 0, 9, 54, 22, 'fa14b64a2197bbd9090eada04a10d834a7fef4408bc9260cf299b526880d9bcc'),
-      (326, 3, 9, 54, 22, '8f6c55c79b6577635ec1511ecbc6f78c0989e067ac2622fb7b825fa80151f66b'),
-      (326, 6, 9, 54, 22, '4d5e65f3b0f8b00aac7be9338c117ed6052ba5174d8a20c83381e27cca5a587e'),
-      (327, 0, 9, 55, 23, 'db1b98e74cceecf628ad594caa9b114b1d2fb24edf3a5c0a5042c635c750a87b'),
-      (327, 3, 9, 55, 23, 'dd5a51418365d4674e7ab9f25ab94934d82d5702d1199f23b9676f91b5d747e8'),
-      (327, 6, 9, 55, 23, '3248260f472d04e3d6f29dace769bef5dfcc3b57a147844f2d9dbdd16c8d19f8'),
-      (328, 0, 9, 56, 24, '14c6cb17ae0c5a10c3cd289bdf2f936a6cc64c3c33d2054ef0b5864d1c7f8a68'),
-      (328, 3, 9, 56, 24, '8e8957970afdcd493f91c0c3baea125109fa4dc9a127916812340b5ebb24cb4a'),
-      (328, 6, 9, 56, 24, '552a5cbc2aec3ef8193b64a084977f019dbd9e0dbbc3afcf318ee38f006f09c5'),
-      (329, 0, 9, 57, 25, 'a5c38ff14e9d719675355a9bea47a578debba8ee756e807d117d541fa8589fe0'),
-      (329, 3, 9, 57, 25, '985a017c12f20811761e6c3b1a4fcbdd890dec3edeff563a81370d5222e23b35'),
-      (329, 6, 9, 57, 25, '4c8a3144758b99c348e0256991ea0305de72c619432960238cc9fea24deb6e2a'),
-      (330, 0, 9, 58, 26, '18c399069835981fbee9e5b781689d77d267fee4a182f22c435e73f0ade1c895'),
-      (330, 3, 9, 58, 26, 'd94a40b0b331be9cc4b76dd7aa4a5ae7404c4d3d4f5004f306b9a91944ae4023'),
-      (330, 6, 9, 58, 26, '9323d693082b00d21bd10bec890a338c03413449a27f739459909310ddbda2b4'),
-      (331, 0, 9, 59, 27, '4fffcb25e04286876b0801a3740146766e2abdfe9fb6e0f5b3a4d63a6016aeff'),
-      (331, 3, 9, 59, 27, '129ba30819ae15d49ddbd42e1c4ec85901dc4225ee723474fc00e5c8038b59fc'),
-      (331, 6, 9, 59, 27, 'bc5d856bd497bdf32c7b3c67df2cec619efc00c04b94051089fabfe57a31a346'),
-      (332, 0, 9, 60, 28, '0318b86dce0306e15022116b4855f84a4857e452dd74fed9b90ecf828525f5cb'),
-      (332, 3, 9, 60, 28, '1b28b3340673b97bd4f75ab4cbb4503054828f04a4d83c24589ebd6ea858e3b8'),
-      (332, 6, 9, 60, 28, '19b4d362fbb249cce08ae987b4b94b3a1962509f01a031fbe57d4cc8a2630175'),
-      (333, 0, 9, 61, 29, '823098a7803fd8a6b35ae9d8f8b7d673596b633a68ffc549ccfd5295e02ab674'),
-      (333, 3, 9, 61, 29, '147b66ec1530e0cc9d50806a4a4d1364e36fcac2e4e5792bcff1f48c011bb6e1'),
-      (333, 6, 9, 61, 29, '2adbb2a87c1620a6adb0c6f25b466209b5ddd6ae05333bf0673793a7a1103a1b'),
-      (334, 0, 9, 62, 30, 'e1d3fa89f0620c307dc46aabae6b84041f1ac9b452fb326d095b9b12a1740ff2'),
-      (334, 3, 9, 62, 30, 'ce7c825540b5eae06edf3b0e69a83a3e88e9086546a55cc0d950de1707929adf'),
-      (334, 6, 9, 62, 30, 'fa20619f0a2c368fb3722a233973d481ce4a5adaa08ae100cbbadccb0e7352e3'),
-      (335, 0, 9, 63, 31, '9f64f1f39279d3a6a3f63b53c169a5d3799544335916f6921f4bf3c2d786bde2'),
-      (335, 3, 9, 63, 31, '562bd8f532fb71b7fd7cfa9bd7cc7d1186d2e26a414e2b94c85125d882818af6'),
-      (335, 6, 9, 63, 31, '7a0aea297e79f28211f06dc554514d2f093ae0caa9507baca52788fc2a3ec53a'),
-      (336, 0, 9, 16, 32, 'd435f644922490082ce186c00c4bbbe55370fff6da07356f1c2c6a6f078a2b30'),
-      (336, 3, 9, 16, 32, '395552329cc173f9554eae17fbf0cd1db9e91040a847aac0bcdf135051476e31'),
-      (336, 6, 9, 16, 32, '04e6e32e16675473172f12ae3c44cbc750091c2d5f8bd41bdf420c44e6178c2b'),
-      (337, 0, 9, 17, 33, 'c8740dce7c1f40f8c5e5099c7b0634f313dcbb49e0ea030a24d5b8e118734163'),
-      (337, 3, 9, 17, 33, '7b06030a46cf296df4e30998f126b6a06c337e8d5a744c232385f9e1731a9b34'),
-      (337, 6, 9, 17, 33, 'a921e9c0c121c27225c1f41c8fb5027dbae061731aeb19c7ddb1172376145b03'),
-      (338, 0, 9, 18, 34, '718de6ce44eb09af2204362aabfd3384b9c132414bc3b4e79e2933475af33b99'),
-      (338, 3, 9, 18, 34, 'ffad07482743f47570b8991fcb36beb8b8339ce2cb1b4f391fc94860fe9efdf9'),
-      (338, 6, 9, 18, 34, '9ebacf864ae03b8ddad143ce26899b1cb95ce3ad58daa67ed462208ae7c756e9'),
-      (339, 0, 9, 19, 35, '3bc692c035c7aff3356c9351e5354ec95a527085f39ebda0ea780a29c097f640'),
-      (339, 3, 9, 19, 35, '1db82243956ae6393c1f7b95b8ea27942239b7dd0eed69f3e3b2be43025dce0c'),
-      (339, 6, 9, 19, 35, 'd762ad07a72a30ccd4ffb33cb62b28445256e7bfa50fca97c47ce0cac09be18a'),
-      (340, 0, 9, 20, 36, 'e50f05089f51080f856e3c0b2685ef9dc8b1740dbbad8e614d73dfa4c3266290'),
-      (340, 3, 9, 20, 36, 'ec42b3b012d558684d9496bddb54bf7b55d62a5b56535af06cf5b7604f3da6ca'),
-      (340, 6, 9, 20, 36, '4f91cc43069b89561d54c2d5299b7dce0f4517a9f32af890a99a38e8e15bb90b'),
-      (341, 0, 9, 21, 37, 'f0ba6132ce731dc4bfb2238356b72a666e7b48fe3c05e10382544fad15604895'),
-      (341, 3, 9, 21, 37, '2f2e993155944157b2019ab4f2387c6acf7615443e72edecbdc5bb5880b16757'),
-      (341, 6, 9, 21, 37, 'cca6d4291c1357ec09bcea7cbe447d7d6fce002fed45c2438b476bbb9369401e'),
-      (342, 0, 9, 22, 38, '00a747eaa132d7c8a3c09f11d4acc3d0de2056a481a9371dec78b1047dce6ea5'),
-      (342, 3, 9, 22, 38, '0fad0a5b64e60cc9101f44b5a7b1c1318e5d310216bf1a582a44ed3a2082bfef'),
-      (342, 6, 9, 22, 38, '5ce66e6e39a0e474f7457fb87dd02b2afdbc8a76d7769ebe521505b07be47178'),
-      (343, 0, 9, 23, 39, '0a44123e28bdbede1ce730bf84ff6462c67af184e939d10ce8546059f6edba1f'),
-      (343, 3, 9, 23, 39, '19a2f07f0b43da9db32c72391b54f8c2a222b087e5ad92e893489aae9b2a42dd'),
-      (343, 6, 9, 23, 39, '1342059f7f9a824e0d0d03cf542db9ee33d3a0aa89e0b57e9cc283ab9eb788b3'),
-      (344, 0, 9, 24, 40, '587766bc3249b80c9fc35ea06cffb996079cd0673483480bc83c72b4e96ad0e8'),
-      (344, 3, 9, 24, 40, 'b6c7219574c76963c260480551e054102d8e4cfb1d1a63ee8339e9a335957d7a'),
-      (344, 6, 9, 24, 40, 'a63c2c187bb796c4aabfadb60ec6b1c76fdd586a0c0b2d2666d5e34c90397117'),
-      (345, 0, 9, 25, 41, 'e42fc03bd95f41d0d7ca6a29c576f8665fda4786862da6a762ce27ec4c0ea064'),
-      (345, 3, 9, 25, 41, '540e0c647db8d694f309b0d25e778ada14f0e14210a110d52f989b2a85c2a4b0'),
-      (345, 6, 9, 25, 41, 'a73c3909ecf1ada4b56acf1f61593a7eff03ded0a43974795734721f06f58d3e'),
-      (346, 0, 9, 26, 42, '63a49e592730d6892df41f711c5b881dc09dd09727a0bf30903fdf8c4641390b'),
-      (346, 3, 9, 26, 42, '79be8d123bd3e7dea41302e7dc999a5ce72118f2a0eb99f5452c3e0a13d643c4'),
-      (346, 6, 9, 26, 42, 'ed087ce086ac21228d3abe7819c659d88a9c7d58e10b5f0753e6bdd2d1fa6bee'),
-      (347, 0, 9, 27, 43, 'd1b6c49588522ebc6df0bc1b1af7afe9e153654ae4f5c96d5237544906a5c514'),
-      (347, 3, 9, 27, 43, '31398a8af6fb6bde43d6ecf657b0ee8d7e2870065856a24208fd552d34289d8b'),
-      (347, 6, 9, 27, 43, 'a9efc1e57207509da598640861c39621054774566425af238d28ed343dba6e18'),
-      (348, 0, 9, 28, 44, '2cb7b33714fab85b60f942fada6f421e1970c76987d65f7cd6be3ccd503d1b89'),
-      (348, 3, 9, 28, 44, '771eb7c954a8693c7c949765e4b07580aae53ccb5310588d817858fbda1f13dd'),
-      (348, 6, 9, 28, 44, '9b8681e08ca718538d63a1866b0927cf0f045fb050beb9294c96477ec8462b6d'),
-      (349, 0, 9, 29, 45, 'c28f6f19280b2ddeca3b3143302fbb2c12358a77981a98a2af4cc8c7c61aab5d'),
-      (349, 3, 9, 29, 45, '2d9281f22ef2518b0636b87e30117bbe8d7262d9847f5099bf39ca3f2af3f5c5'),
-      (349, 6, 9, 29, 45, '9189acfda59a135fe4c3fe830a2b47b866e0d0db65b4d0cd5395d1928ae1ca7d'),
-      (350, 0, 9, 30, 46, '7b10453e3f69c0082e7ebc129f229c5f580a33ee847c9202034e63b4678b9d6d'),
-      (350, 3, 9, 30, 46, '255fef801ecadf7ba0ae2636b89b34ce056b0643cf1bafa8799aa5ab8416d61a'),
-      (350, 6, 9, 30, 46, '1441627fd5c52ddc3db0a5ba1b9906dc73d4c435715d7ffd92bb9aabd723466b'),
-      (351, 0, 9, 31, 47, '2937e3390b941c2c76255ea46e3c7ec7ee0bc230bcd376d52963a8e1e46daeb3'),
-      (351, 3, 9, 31, 47, '93f51739fd251d89a12bd7069901e6896d33e57d00a73766c43aad739ce9e7c8'),
-      (351, 6, 9, 31, 47, '0083c0f1b988d4206842a50b86cd6ee9026b680d5ccdec96d3640d2cea2f5758'),
-      (352, 0, 9, 32, 48, '7b9afd84a16f814f2eadb5d8e8b2cabae35c50b5c6891cc0344ead1a6cc69404'),
-      (352, 3, 9, 32, 48, 'e4dd71b23c4693759cd03bb38f5212f07e2361fe47eb4424931be7b975f95cf6'),
-      (352, 6, 9, 32, 48, '8ca4fbeccd529ea36cf91959b3ffbe023543c9d747d7d7406b0461cdf9e9e3ca'),
-      (353, 0, 9, 33, 49, '3a6156049a83670624a3f0428d0ebf631721327ad0bed8a40dc31f68d96ab1e9'),
-      (353, 3, 9, 33, 49, 'a8442072da8362cf3a040d454d8654dd40995762471ff1361e59ce366cc85bd8'),
-      (353, 6, 9, 33, 49, '4747755b0ba1a59f20361daa77b6f1aad9d9b047dfbbbe4b5f551217aa8da962'),
-      (354, 0, 9, 34, 50, '90fd0f3ede3d97d5f96fb77fb1718ade20bdce1eef5704074415d22566489dca'),
-      (354, 3, 9, 34, 50, 'fa26003fd86bb6c8a232d0a49cef15f24c73800e6a742995bf310edbd107c0d0'),
-      (354, 6, 9, 34, 50, 'ef3d91a1286b5a55f1a6d44a8e0f0ab1deb7ca09ad40b7894529e13b176fca3c'),
-      (355, 0, 9, 35, 51, 'dca7d284fc43217ac6445607ed3b2163fad763297566adfa3936aaf138d64cc7'),
-      (355, 3, 9, 35, 51, '8553d3714295555b3b29efaef55d85d025cdae176d81ce954d5475cf8a8e6bcb'),
-      (355, 6, 9, 35, 51, '0e4d7e3b71329a12eb2ce4562b78b8bc1c4b192e47c0b2397d75da4a1aeeb620'),
-      (356, 0, 9, 36, 52, 'ed2df4df560ae35f96e06de8c8ecf0b20438266c17913a164ec813550c2f1e1d'),
-      (356, 3, 9, 36, 52, '5bb84bf0f5dda5347eb235b0b79a3ab61d595b8d2660d8d6c32b68381122ac5d'),
-      (356, 6, 9, 36, 52, 'ff1b2fabc8f97027dd0ca24c01877998d6d940821548c94499633428417f9dc5'),
-      (357, 0, 9, 37, 53, 'cd254bd7bd616f014d062affd4bf30a5a9ceab7707605d1d72f147cf1a5e59da'),
-      (357, 3, 9, 37, 53, '53d8c843cc005cc5872bc10d68e14efc3fe5f059c5a7fb2b1af58161e579bc65'),
-      (357, 6, 9, 37, 53, 'f41ee438b0e249910719622bb4e46896f7e625d3eb65f92a5bdceea208f5c12c'),
-      (358, 0, 9, 38, 54, 'c54e8f87bdcb3cb4c62b0e62902137b3dc9c57192f9aa421a1d7d904b9d9bdcb'),
-      (358, 3, 9, 38, 54, 'a60b16cbc6fc47de9017137f87a73d41239e14346f9a42d82528e5a1876d4b36'),
-      (358, 6, 9, 38, 54, 'cc70200e78367c2d0dbe7932246237f90bbf1f2eb559b2b98edd2a71c3b0b744'),
-      (359, 0, 9, 39, 55, '2951628a98327a9c6358972b64406f3344a40ae64ec40937d37fa814327143e7'),
-      (359, 3, 9, 39, 55, '87940fd9f8e84d794f5c3363cdfccb091a86356bd1d6e9fb321866f824aa2b8c'),
-      (359, 6, 9, 39, 55, 'd341201c9bbbe8ebb452b09ca27827690c7de2584c80cba0a59fa9e1ae3cc626'),
-      (360, 0, 9, 40, 16, '969fff50bcde4211daff0b3c7f3b5a49d29dba1c4e9b2b3708d54839fcba9ad9'),
-      (360, 3, 9, 40, 16, 'fc891fe927e275767aae98919e5233e10ec90495cd058299408a52625e289354'),
-      (360, 6, 9, 40, 16, 'bf287fb459bd4c393f7bbb44e7c9b2712da441d6b68337db921a4d2b6027ce98'),
-      (361, 0, 9, 41, 17, 'afd9e97e2bf1c4406ce13ac0d812bcf419f8261b5d2558c3634f9e293b14b84a'),
-      (361, 3, 9, 41, 17, '445ddc53fa96e6b10cdd49e00e8000c8893f56b16de3a25e87249dd9dac2bafb'),
-      (361, 6, 9, 41, 17, '423c71b2a4997c6536910f90c9d1a558f5f6a52680188c0b406babd61c227cfd'),
-      (362, 0, 9, 42, 18, 'af74c3e02101ebbc0382cfcc5cb963b56d6b1abc71510e1858ebd9c1cae39fdf'),
-      (362, 3, 9, 42, 18, 'b068ed5f3d3c69bb4dc26623672441bcbc04bf4d6aad9f9636fe522d32808578'),
-      (362, 6, 9, 42, 18, 'c1e82928161d1fa9a4afdb6a945458e72e7ccf8d1eb375a8abf226bfa5e1a51f'),
-      (363, 0, 9, 43, 19, 'ecf36c9b8efa998b06adf5167c1910c74f9e0301b267a313a091b5021a0349b9'),
-      (363, 3, 9, 43, 19, 'dc4acab29e207b6550b65a762243c2e10624c235436f71c627843179bc9a08eb'),
-      (363, 6, 9, 43, 19, '21e816858683d51e9b7a004346f0458ac2be03938ba0ecbd922bc3e6c46b08a9'),
-      (364, 0, 9, 44, 20, '88d99b7b36eb92fff767e76a1c711394b3f873c67e9c25e082d567186817d6cd'),
-      (364, 3, 9, 44, 20, 'd967a2debd955ddc7f5179d9a5bc6524ea448f8f44ad784368a7885363780195'),
-      (364, 6, 9, 44, 20, '18c48f30f5f9d44ab4224bf6b3d3928d77af916f15001088f7ad7933c3feb264'),
-      (365, 0, 9, 45, 21, 'c9dfd4603b35c39df1304c51245db19a2ed9894f14a39b11bf8ddb86bfd5f8f7'),
-      (365, 3, 9, 45, 21, 'cbd86a79f8536fda17d6c6653dbcefda7741c14fcb43f5d17f0f86c4ff77d7be'),
-      (365, 6, 9, 45, 21, '86a5bec9ec2f055d77dd9a4911a056a72f6facb8b0ed4864a63db4bbec040c38'),
-      (366, 0, 9, 46, 22, '57ab134bbd06d6f8812a275b953e802b8e51ebf2e36cb10f334bd3a1eb418404'),
-      (366, 3, 9, 46, 22, 'bb417f73bd87e99e14558cb12b0f2468f5a679158d41b35fd4e37a0d57020c15'),
-      (366, 6, 9, 46, 22, 'e757258a3e9d3eb8fddb5ecc74dfbf487497d802833185becb45ebd9b71890d6'),
-      (367, 0, 9, 47, 23, 'a350b8a33871ace19c1453ac1e091dd0111bafe65148ae836165f7422128a1bd'),
-      (367, 3, 9, 47, 23, '91910cb1b2c4677791cf749b2326e717b26d63927402b413fa6cde39721e4ec7'),
-      (367, 6, 9, 47, 23, 'c7554e57e9e8790f8b1b8a7f16a54e4a31a8c20587ae8e0f0d7950f32425dedf'),
-      (368, 0, 9, 48, 24, '8377c0986399dee7d6a515e0ece0bc7285ee99de1a0a08ea6cd7cc555cc45fbf'),
-      (368, 3, 9, 48, 24, '3f70055fab97905087607c6457d163e79b93a47c84b094c60f000f4a9e06aeb1'),
-      (368, 6, 9, 48, 24, '1abfe45e849b3b0d9a8e6b142c11b1dd2e0410fe7ad75fc1ce1b5bff6c160df7'),
-      (369, 0, 9, 49, 25, 'e0678696f9a508beebe7a520da246222f1d7d548bd5109936fd0468142ab0fd2'),
-      (369, 3, 9, 49, 25, '96adf5b36ed4c926f678f8687efe3d2f2571934be03c03794408d3fa00d5454d'),
-      (369, 6, 9, 49, 25, '158d48e81cc7f02260d945d6615ec49a72ae682f922e9764bf25b756619d5997'),
-      (370, 0, 9, 50, 26, 'dc9783435c2ccc2b0626213998071c3341ecfee0d52f2b487aa4fd3d5823e499'),
-      (370, 3, 9, 50, 26, 'b06f13000bd8afafb08d463b8d43845f36a7e2ae6493bdafa5a21e541284b39f'),
-      (370, 6, 9, 50, 26, '1efe932891f4b4cc748465ef9a198424aed5b95300bd12bf4735d0180ce772fa'),
-      (371, 0, 9, 51, 27, '88fd1b8d82ce09fdc4fa2373204470d1f2162a9aafa9dfc0d8f59c318b3d03cb'),
-      (371, 3, 9, 51, 27, '9b9dfde71a3d3e0d404fd3b5deea9a3c9ade394b80364e082a161667d3a26805'),
-      (371, 6, 9, 51, 27, '66dee915908a109016ee0b45f8463006434395dee206f5a24185bf88a786f775'),
-      (372, 0, 9, 52, 28, '91f610f5a189487a088b8904ffcb1501ede3990344cb6c4e1dce5faf65c46c69'),
-      (372, 3, 9, 52, 28, 'b0d3c4389c4fd23ce7cb066068e49ce4dcf55225c1a9089e042d9d988a34391e'),
-      (372, 6, 9, 52, 28, 'd051f8b150c170d97f9d3dd0d07adee6ae8c243752ba0fd332c390c5f20ce005'),
-      (373, 0, 9, 53, 29, 'f46631cc554116a5a076770d3187fb544ee9556b3ab5ac8d536cd5b374ea5254'),
-      (373, 3, 9, 53, 29, '2471b4ea9fd24f5312213ac725ac9c701b7242f2248ef148ea438d8bc7676d21'),
-      (373, 6, 9, 53, 29, '6b2223b87893842ec5ff2adea74a8df84a288962452110ec5387e09ff5fc22ef'),
-      (374, 0, 9, 54, 30, '47a7fa0f198ca1283ad679c4d1033cc58d3d68c7920a1153fb6ccc6c905f79bc'),
-      (374, 3, 9, 54, 30, 'cbd9d7ba7ac6a0cd00972c8960b4c3c56cdf3a526a26eb1f3bf4db3ac0e0021b'),
-      (374, 6, 9, 54, 30, '3ea3461b2cfd3e59628adbff596af8596353831902831d3dc881669ecf308ad1'),
-      (375, 0, 9, 55, 31, 'a60f50d4ea6570811280de3f6f124944c323a45a396abdee4948c6632e82ec0d'),
-      (375, 3, 9, 55, 31, '5c46abcd1056ddc25849c55881fe597549d248694bfd460b9aedad80b683e8af'),
-      (375, 6, 9, 55, 31, '8d4d881a9015e4954bf88f980e4ce142516ce20cd16c0c80e748d5d612de563a'),
-      (376, 0, 9, 56, 32, '89f05ca7b5718dca2e25a191b97dc9c3649d17af10ed70f689b4efd4df36de75'),
-      (376, 3, 9, 56, 32, 'ddd62bdba7747b0bb814275983c1d3d199e81c69c5d0c63eeea389d8483d763c'),
-      (376, 6, 9, 56, 32, 'f8d4dcfb72adfea7fdf67f99e8197ab287a53a530e686a76f10b891118fa6102'),
-      (377, 0, 9, 57, 33, '6397dea6638fbea535b505c3e128568433529179e36b5138a71b97a84616fb13'),
-      (377, 3, 9, 57, 33, '8b359f6b8f7d578f71046a9a0f6f7d6048b34004e347e4552f35398954ebbef1'),
-      (377, 6, 9, 57, 33, '4822a7d54d985b6eb7969ab61742660c94c0865cc8c681dd46e3e56396dbddda'),
-      (378, 0, 9, 58, 34, 'ce2ba1215c3989db29bbd18b70b89a957ee3ef6724931a02f0d11812abadf750'),
-      (378, 3, 9, 58, 34, '8e6a831e2ac4655c23f10faad7bb41efc241855d0157130771babdf2168e3e3b'),
-      (378, 6, 9, 58, 34, 'ef20dd95316b9a36fb28f1aa7bbec5af4c48e0c04086cc6fc663ca0f2f9f17b2'),
-      (379, 0, 9, 59, 35, 'f2855fe6addd308c361344446a74e8ab7d300c13f2802847de1f943d87066dbb'),
-      (379, 3, 9, 59, 35, '91594cbe5160d1408e18ff80395fd1973a8e04fb449fd5e76e6d84b13c26c239'),
-      (379, 6, 9, 59, 35, '238bcc44e4a01c519d442cd541378692055931b686e9f9f39ec884bf56f4484e'),
-      (380, 0, 9, 60, 36, '46b73e4ed410a8ef7d923b9e97d838c0d3ab34a9578c73195a2603a42f3eddfe'),
-      (380, 3, 9, 60, 36, '454d959e36c2d66dff37e0ee125bf5149d5ec99e7c7a6b5e66cd919ac141a1b2'),
-      (380, 6, 9, 60, 36, '73ebd93d77fc7e5c478244a09fcf20758f1698fab6c7f2c043b123d201da8602'),
-      (381, 0, 9, 61, 37, '58836f681640b9cb9908c4c092ca88ae98528be5722fdbca05496f4b642056a9'),
-      (381, 3, 9, 61, 37, 'a6503d912dc387e9e17b256ac5cab5e4c1cc83478aa78c5fdc85a7d82a0b671d'),
-      (381, 6, 9, 61, 37, 'd4fbafea5dbb2a94c238cdd21ed6390d931961cabef515b494d26431deb94943'),
-      (382, 0, 9, 62, 38, 'e4292486761589b9bf2e0117b1f3d8d1b37e1aa23232ed1bdbc205ea8a8c8568'),
-      (382, 3, 9, 62, 38, 'b8b45d624d11852c0cecbb65a2dd67d0f983f40a41f3cb6446772b14f83a3fc2'),
-      (382, 6, 9, 62, 38, '8f00a058a9cf87f1d85e38f321500dcdc5e4c703ec24b077ca4eef24521ee5e1'),
-      (383, 0, 9, 63, 39, '3fdc5619e34a0124605d6042d9c090883bdc7d7474d5d498e34eb086be1adabe'),
-      (383, 3, 9, 63, 39, 'c1b310b8511007cfe6ea5a61502522efa2f25f071665c2ee7bca8b84086972f0'),
-      (383, 6, 9, 63, 39, 'a7fe2c0b8c42aea06d2be0f225d2d3bf602e544f7f1d3e6efe8c39b39d881df0'),
-      (384, 0, 9, 16, 40, '854d91b38378ab632657e5d9ca58a9635801152516274233485e2fec8e2b495a'),
-      (384, 3, 9, 16, 40, '5accfaece944999a6e50408cbafe2e5e4f62fce297675746a017a082e37d9789'),
-      (384, 6, 9, 16, 40, 'c46ff1baa17dab3754b5c908f610739f857a0874dfbb3883ef674dfc41dc4e16'),
-      (385, 0, 9, 17, 41, '7a0acb97bfec6101e4d13a4d031659da5a66947770cc1e7db13746c789451223'),
-      (385, 3, 9, 17, 41, '4e0300f2ef8cee202a62eaaf6b8d50dd28c7142ba593604b23d934e48dd23d0d'),
-      (385, 6, 9, 17, 41, 'bf6e8464fad2dd74464eb5a64ee9fdcc0271d8a3466981f00056b58982fa0522'),
-      (386, 0, 9, 18, 42, '8a36a5f5289c255e889f0296aff90b3f64fe446e7efa6d696d25b0a975383221'),
-      (386, 3, 9, 18, 42, '358b7d1e4cb9501bc98ab47eaed37e265767577cf64ac26af37065893395106a'),
-      (386, 6, 9, 18, 42, 'e3f84ddd215b822d08a05431be3466ae8eb647b2e8f2153e677b2957a14111d8'),
-      (387, 0, 9, 19, 43, 'b9a728f739687b4df1b4d469d3e89ac5172ff414a10c8bdbff3f1427a0491d66'),
-      (387, 3, 9, 19, 43, 'eacb57c058886447d2a7f8aa1df0db16467c3dda7c18a948309abdf8848a3b66'),
-      (387, 6, 9, 19, 43, '1bbd76e3093eb414d8248d4db061daa78b17b5d4fba68197c0ce16f8bbe0206a'),
-      (388, 0, 9, 20, 44, '48708ca2c6a9c2c233e22f24d79d532bcc0abf04efb97c1f9584f01a91d60226'),
-      (388, 3, 9, 20, 44, 'd8839ff4c6e092f71e364702f81cdfdf3d5c5d43616932959c1955397456b3dc'),
-      (388, 6, 9, 20, 44, '0e05bcf92896d3749aa7739a2c74fa33d031decaffe34c1bfba8ce5af3808fca'),
-      (389, 0, 9, 21, 45, '666288b8426677f15d17b89a6ed42b804b1abfdbc20a071d19f6b626a6915042'),
-      (389, 3, 9, 21, 45, '69b86ecc24abda6ed93009b7584959c69ad0ba748cb6d60b2ce8c38d0b3067f2'),
-      (389, 6, 9, 21, 45, '41b98855fc6a7aa341585318d7a628cacd698280d73454dbeffc6d3725f2778e'),
-      (390, 0, 9, 22, 46, '023b29cb1272dd8bdbd7ad0c94e810963eae76f52e226620ce0f2cb15ee2af96'),
-      (390, 3, 9, 22, 46, '0d480e526cf4eec01b5be1b3cade05b93b4c89ff1ecd3ad6987cc4ca677ab46c'),
-      (390, 6, 9, 22, 46, '9a3f284aa1f5f3ecd4a6e893f02bfbbb801b5501a209366e8471b8eb164e345a'),
-      (391, 0, 9, 23, 47, '4be12806c32f427297e2e77fce908a4ad6f70a227c7d240186f1e9d4952ca568'),
-      (391, 3, 9, 23, 47, '30021c114d8e2a17a0e43ea68e9c5618567c06850e0c681003c51765d7a58553'),
-      (391, 6, 9, 23, 47, 'a9a42387a24bccd094ba1ca3083b0761b1272bbe45308c0374de11273503c2be'),
-      (392, 0, 9, 24, 48, '99bef1c6008b8956dc283dc7cfaa83261db4fb0641a23392f0a20d52ea88df10'),
-      (392, 3, 9, 24, 48, 'c77c50ac59c65c375adf5d040f1005c91ab81f63effd8487f1ceb802f54ca1cb'),
-      (392, 6, 9, 24, 48, 'a529e8c51871daba2ebcd2ce3520bc431bd50a3bf562ae3ccc6a9113056e8d61'),
-      (393, 0, 9, 25, 49, '8c14193b071d97bf0278fc03cee2f1987c79fbe9c7299d494ea4485cfb7bdba8'),
-      (393, 3, 9, 25, 49, '6df9b269d8a230e653bd3b95db4a56518f40f3c6ab4f95d2312c5cd36765d0e8'),
-      (393, 6, 9, 25, 49, 'f20e43b0bad6857764ec93a6dd7b57802e65e3a5c0ff41e6d70fb0278dbb31a3'),
-      (394, 0, 9, 26, 50, '6708a3a3325f5ba022cfe29ba63521cbd7787503b3fbcaf25d9fdaa26796aae0'),
-      (394, 3, 9, 26, 50, 'e27e203c9a5c44f0989a4c5ef083cb10ac75ffc031d29e3fac6fd892abd0d554'),
-      (394, 6, 9, 26, 50, '1cbb739a11527c981c4848a1ee3c1463a1ad075832ab616bcdec59b285e878fd'),
-      (395, 0, 9, 27, 51, '9bde9940d9a90451932ced1657b2267374e7416a77847ab9ff4acb831853e31f'),
-      (395, 3, 9, 27, 51, 'd421af2b7966ab80f52a4d893495a105f47d20cb4aab4502034a14e3e2747d81'),
-      (395, 6, 9, 27, 51, 'b676ccdfc0ec34b1db5e5b6cfc32767c89fea57ab04d94e1835a9305ef28b47c'),
-      (396, 0, 9, 28, 52, '34f0bc3a0298e59304aa8015061eb79929ac4db607cb04cb4f94d9b40446f3e7'),
-      (396, 3, 9, 28, 52, '90b13ecfcdacdafeb2e769ccc6b01412d5fb5ed36766eee93f1bfddeb767a469'),
-      (396, 6, 9, 28, 52, 'b1c14d89cd9f624e6452a608252d13fb1530ed3248ea841b058f0c0338999b29'),
-      (397, 0, 9, 29, 53, '430aaf82302e710d865221d1d33a683b69844552269a4e4352bfddbe49e103f9'),
-      (397, 3, 9, 29, 53, '6c105b210ed581820ab741a5b45b732978dcd048520a0ee646563a6da23f6f6b'),
-      (397, 6, 9, 29, 53, '7fb5d730339ac3a700913d2aa5a58004f97cdd278e24b9fcdb1fc0972e3df639'),
-      (398, 0, 9, 30, 54, '04a33a142bf870e3326a07077655019c2e7c6bec2e3a6a245ce533e1e7044057'),
-      (398, 3, 9, 30, 54, '1de5c714e22f228e9a2338d732823af9ea25899407702f86f5f1ebe35859eae3'),
-      (398, 6, 9, 30, 54, '5b3ef24ad8c99b18bc64313066b26ea16968ca50b564eb8f0056e9244481cafc'),
-      (399, 0, 9, 31, 55, '87c1d22fac0d7eca27cc21e25f3e6c1af5998b8bfb5f2b876dca34cec08f361e'),
-      (399, 3, 9, 31, 55, 'ce3d4dfc97428b1fb9eae7597c0b646fa8223d9fe65f3cd845fc62a4d8132a23'),
-      (399, 6, 9, 31, 55, 'b5602d51f0a3e00b9577a42520f7662c790d86a5307260e37608793cca78fd05'),
-      (400, 0, 9, 32, 16, 'e0a35bc714cd764998c5547014941b146c21408f571da1202f2350fa1c2dd761'),
-      (400, 3, 9, 32, 16, 'b3f5e1ad3af1f073a184445246e248f8a939466e07b957c9c274d49c5547d966'),
-      (400, 6, 9, 32, 16, '7b24fea10e7e3aa739032673de0586e9473dee52f502288c006dc81336f06888'),
-      (401, 0, 9, 33, 17, '5a777ccee7ca0eaf9c9ac97bda5bd9a9f0e528f45e198e6e4341faec69812fc3'),
-      (401, 3, 9, 33, 17, '04dccfb296569aae6a7026a9a71fd2fd97f1504d19152ae8641d4c51ce8b1be7'),
-      (401, 6, 9, 33, 17, '6972a403cc230425a389105b37c86afe6e0d1ae450974fccbf6f1dc5d69cc5f1'),
-      (402, 0, 9, 34, 18, 'ef63944ea095a0106de03b307b6f8a35bf7b1d92894b74ca8589445a9fed2ca2'),
-      (402, 3, 9, 34, 18, 'd22df0be0d4e0031f055b487b90a55381d46e91771ef88e4c0ff907104d7cfcf'),
-      (402, 6, 9, 34, 18, '883c1be846e76e42b40cd1dcd0c67da8fc08b88b67f7dd13723e608d27a85942'),
-      (403, 0, 9, 35, 19, '4ebefba9b3682d9507014ef62122c6e4a65b7394ced5e5141b7c08c5867a2b7c'),
-      (403, 3, 9, 35, 19, 'e2e1bbd3112e48f87f51ba696672891a5b33f6aad625899824e6329000e90474'),
-      (403, 6, 9, 35, 19, '6db346e7c6bd5d7bd3fa607ed0e1bd4e55eee0016382a7f166edbe2b0c388836'),
-      (404, 0, 9, 36, 20, '791b9509a47bf690b323c6b994818254c513f223a6eebac61204fba4dc1ef99d'),
-      (404, 3, 9, 36, 20, 'b81f1a7eb40656dbc7f5fd98422e58ad287844da99d28ed7ac268bf446c72481'),
-      (404, 6, 9, 36, 20, '69c7cf5dda6408124ad93ea4ab62065e1a4e56b839f7d4599beffcaa7796af04'),
-      (405, 0, 9, 37, 21, 'aed4c8d5d8dda50697b48ca4d60b1a4fedb9b36543d79bdd14605fcf67622b5e'),
-      (405, 3, 9, 37, 21, '5de11c2623840d63e0da14176349ec58951d148dd41ae33ce227ba2d63876ba9'),
-      (405, 6, 9, 37, 21, '41985a2a8b1c739da387274481d07e1b6f2e9bdfbae18cb2a3286263b6811f34'),
-      (406, 0, 9, 38, 22, '3c750cc0af217c543b90cee4e4f5ee97b4a483f50be59c21679a131a1e1c8de6'),
-      (406, 3, 9, 38, 22, '74b7add77748ce6e46e78ff873d83b53c51b60853bec96bdcf7946a1c80e2ce2'),
-      (406, 6, 9, 38, 22, '687f60830079bc7f6e640a1fe29d101942d7db1e9a52cec68a0ac40c53b89f8d'),
-      (407, 0, 9, 39, 23, '19153ce751821b62c8a35ca56bcd8bf49c993bde45218ca4ff14b1cb9de81b23'),
-      (407, 3, 9, 39, 23, 'd7919b318a30200d205d44b09f2447520bdd56210eb545bcd8bd53cf20d08d3d'),
-      (407, 6, 9, 39, 23, '2bebc852a265e0667cb9a95891ac4b0729702883f91abf9aaf166141a6eae0e5'),
-      (408, 0, 9, 40, 24, '522540d1918e63655ddc7c31c0b50e2deae3a2a0f0bad46caa9cf7c4dd9bb401'),
-      (408, 3, 9, 40, 24, '8fc6ebffcd2a8471dcc8b6da71e86facd7b6bd5a23d3a94a84fd89a0d58ae831'),
-      (408, 6, 9, 40, 24, 'e6b7103c3b9faea4bc0668b8e55a7a0034657d1ebd3a03b32207809951f9919b'),
-      (409, 0, 9, 41, 25, 'a8ac162a314b1fd01d0ab17eadd28a754453fa75242c5e465d744796b80160f1'),
-      (409, 3, 9, 41, 25, '6ccc1d5cba939ec970b681e52be3ec84cd2eef3069dcb4d8e72a482394fb983e'),
-      (409, 6, 9, 41, 25, '07765646b12e946d819353baaa561d12d69cd7f6823d805c4ed5eab2f5adc164'),
-      (410, 0, 9, 42, 26, 'd040bf1de52d1cb6f6d1f8a29cafedebc406fc95b445ac531c3b974de0a88788'),
-      (410, 3, 9, 42, 26, 'add81168dd14ad71dd31c37ea77fa533923f0b7f8a5a9b6e9a4e61fb265c2645'),
-      (410, 6, 9, 42, 26, 'dc7f792b624570e247166c83fb47d79e1fec11062df267ec5c71789e938eedc8'),
-      (411, 0, 9, 43, 27, 'e2418355c1de8fdb648543164090ca69657a47181ec0db4a8bef69e894194a98'),
-      (411, 3, 9, 43, 27, '75a27622efd5edf20f1229e7cbe4584549e65ec16bb5d0da0863c5826870ea96'),
-      (411, 6, 9, 43, 27, 'e8a76663393d598440903ec937be71f090c5a11fa3e14ef30f6e48d121e765ca'),
-      (412, 0, 9, 44, 28, 'cff4bf516f9ad7b66a09551f5d0f34e6831e385b9f17ee7f48ee9c055dcd9e5d'),
-      (412, 3, 9, 44, 28, '628d86d609e7701ea9ab945b62ee9bc58ac1d800ba2532f143d92f4ca4b0e9ff'),
-      (412, 6, 9, 44, 28, 'b33bd1ed4596bc9c33c107a5b3c531aa2403de0e3e2c3a4caafc90eff10707c3'),
-      (413, 0, 9, 45, 29, '5605688f135e182aad3ba733521b5d6c6ba27193be83a3a42284b4266d63b704'),
-      (413, 3, 9, 45, 29, 'e3d709d932c6aac677bef17cbf0367c0f77fdd44072d5c4d91601301e4846e47'),
-      (413, 6, 9, 45, 29, 'f6f348d9418867696e85e11035d02470eb54570d55765fc1f3f109a026740567'),
-      (414, 0, 9, 46, 30, '08bd66738d33dba5721ed09f0f75233bd8aa9b77c2d09539cc5ca49075d855c1'),
-      (414, 3, 9, 46, 30, '965a33c5b55db31247859252a0f5be5a676e987c9a7ecddc556a809e3c6f205f'),
-      (414, 6, 9, 46, 30, '58c9bc88f0050bd085ed5b1e2ee3b891816a3735ae3a56365f07b079f77d2d83'),
-      (415, 0, 9, 47, 31, '5ebb0e0ad2d731542a75389e04758f8e5eea5d6485d3e84c835bb5d961118c66'),
-      (415, 3, 9, 47, 31, '50d3c55775ec794da63a89ffd6487371d1275827540323e97a4bf5a5d8cce133'),
-      (415, 6, 9, 47, 31, 'a302f423964e198a9cbf25dcc5bddb4df3aaf13fc586efb2d333fa26bcebbf36'),
-      (416, 0, 9, 48, 32, '66b0078eecbd6b5e7fc8668228fd0cffa9523ad0c8046719375113e859a60795'),
-      (416, 3, 9, 48, 32, 'b855c1c97f01a835d1c864e1fd5c72e5ccaa4ca9c55ed46c00bd3c44b1f1264f'),
-      (416, 6, 9, 48, 32, 'ca72c7bc78d2dd2eaa73cbab85d742e245c25ed73d80c4e5c7a2d7d2cb89287b'),
-      (417, 0, 9, 49, 33, 'ac32082281603e511ab07a0458d5aa7d7a2f770560e9136647e40df6a140852b'),
-      (417, 3, 9, 49, 33, '959d0ac47b91e2b3d12fb0649849ea87e139c882922664c616b9ae0b45072ffc'),
-      (417, 6, 9, 49, 33, '4c8745f598ae6e2af551c49ddc9c5799f762d505a2b7527303b309150ece87a5'),
-      (418, 0, 9, 50, 34, '17e9fa05bc58beee4e5ad48ec9587587c47fe8bd9e7807897454e6bcb555f460'),
-      (418, 3, 9, 50, 34, '267ecc087aa1e9063387f712507ea38c0e2b6979487cda1549cbe6807d4dc5ac'),
-      (418, 6, 9, 50, 34, '43353835be308681d221cf36fab8ab621ebf2ac16ba6d2d163aaaf80320b5dd7'),
-      (419, 0, 9, 51, 35, '307b0e38049a2ec51137149e77704847bdc01e81d1753fc72b6a160994d3b371'),
-      (419, 3, 9, 51, 35, 'f133f12f0f73e0b76d931e6e784d43570d4ec767841cb6c4ed810423a29d1484'),
-      (419, 6, 9, 51, 35, 'a89fb4c595ab26c63245d449bda0eb0ac77d79ae3bd91214ac29c7dc59905716'),
-      (420, 0, 9, 52, 36, '3ecdaafc7b11602f51bb4de491141d5430ac621e41b3a00ddbb4cbafa0da9808'),
-      (420, 3, 9, 52, 36, '40a10e2ba6c3eed83aae12780ecab12ddf7f3aa41186cc8a59b61809cb8290b6'),
-      (420, 6, 9, 52, 36, '2f1da7dfa5975422c8b35170215b50a7e683f60bb1370aa12d172daf6486b559'),
-      (421, 0, 9, 53, 37, 'dcb9052f06506f5c398d6b49385d225956e94df4913338a3422cf05556618d25'),
-      (421, 3, 9, 53, 37, '9a7fe91317f93000af10f020ae3bc033374af4ba2eb0e514c08bd2cc4512cb6f'),
-      (421, 6, 9, 53, 37, 'f751d8b65852b28bf2075de2c4c48f2f459ac28345e09d88e908a2b9230cdd35'),
-      (422, 0, 9, 54, 38, 'ad94272f6eb009d19d66b0cc7e6cefcc2e2c2724b14b4a516c843d4117f5c43d'),
-      (422, 3, 9, 54, 38, '5a3950e5b083d35231657f506cf47fe51d18e4990d95f5808346b83cf07423c3'),
-      (422, 6, 9, 54, 38, '32e88872f4a11cd8378db957e76a372f9a0d40fd88f29ea05312e00acb9e8ad0'),
-      (423, 0, 9, 55, 39, 'f2a5f3ee2763ecdd2814bc00b08d032020b5515c37bce3139b98fcc101e82a9d'),
-      (423, 3, 9, 55, 39, 'd38d4178f28e0eb05df863bacb1a2e9d6242b02a19c747a0768db83eedb88613'),
-      (423, 6, 9, 55, 39, '20a696b6a22e16d861d00f3d1331677a2591eb00fa287ac02c6f0c11d93a60e2'),
-      (424, 0, 9, 56, 40, '8c8aced0b731647c9400bb35bf02cdf81420bbabdfbb31495fbe6f6ebfda79b5'),
-      (424, 3, 9, 56, 40, 'db658a773351228926445ef11f9a6a595a2730409ab618b8c4d6b93e5e9b9cbf'),
-      (424, 6, 9, 56, 40, '4ddf345dd6721c5ca1d1e055f3b619e44059152e3fc15febc3b3336bfe44b47a'),
-      (425, 0, 9, 57, 41, 'f71ec99c8bfaccee75c8993f4935d66d8aa3fda12fd622609483e986ef4b1c54'),
-      (425, 3, 9, 57, 41, 'dc8b8ff63f3b281a39bd6b58cd34b2df1f821a3f511b30f2463b98a2b8295617'),
-      (425, 6, 9, 57, 41, 'c2b777ef570f0392284d044e0ba6ff5c63a4e62319ed115e7664bc09957f9b75'),
-      (426, 0, 9, 58, 42, '6a4f990596843148edde8cd776f36d83bb7b0daa66eeb64d2ddff07db968138a'),
-      (426, 3, 9, 58, 42, '95c087e32829c648e7f0b2c82f6f6f265851bb48503ca7d3ff30a69a8ed72f4c'),
-      (426, 6, 9, 58, 42, '88a5ad0abcea2dc2418ffd5fadc5f4182c5909d9a0b95aa10e0da4db8439a2db'),
-      (427, 0, 9, 59, 43, '33af2c4dbfb0dffa8a3cacfba0259a1a78299faf6420a85bea7cf632b2660d59'),
-      (427, 3, 9, 59, 43, '82c5b98e7a840bd25419f27d4bf90b2009f70a5ba041e4f3b17be4f24846bd83'),
-      (427, 6, 9, 59, 43, 'eeaeccab963a418f5bb45de305aadd2d526c7baae8fcc3e2891010366ca2883b'),
-      (428, 0, 9, 60, 44, 'bc8611c98ab49006cd9a23e6dd5b2749d17fbca39b9b477a7828dedf8d8ecf8b'),
-      (428, 3, 9, 60, 44, 'd8765be2559b9b2af8c2ed006115725bbcd7ed35a82edb2ac0b72cae0a3d78d5'),
-      (428, 6, 9, 60, 44, '4c9c819d9b2be6c0434fd75c6ab6a18c8cbd34d588a890612f71ff9702520cb7'),
-      (429, 0, 9, 61, 45, '61054aabd9255b0b9e27e4b83e1d5840a7b87808595d464018f979c84402c44a'),
-      (429, 3, 9, 61, 45, '471d43e52600250f00715113d1b97e3c307bdd32782367fc1e8026f006864abe'),
-      (429, 6, 9, 61, 45, '2ece890f7de260b754c106b54b6e87cc634cd9c37da24858cf6941db4b429f0e'),
-      (430, 0, 9, 62, 46, 'c7519e480a7d27602bc8a47be1e744a41996da7761219de3beb3694b082fec52'),
-      (430, 3, 9, 62, 46, '373accb0427566340a08ca19b06faca4e91faf96c63e77391011cf01785960e5'),
-      (430, 6, 9, 62, 46, 'd95c0525c28036be6cc19be05066fdaff6f795026922cd6c8764b4add7cae725'),
-      (431, 0, 9, 63, 47, 'd4e8200a4db7d40dcf0c1eebf8c152fa51f4099a2e052d820abf1fc3268b5e99'),
-      (431, 3, 9, 63, 47, '21727486ddaa5e3bcdeaada0c9a7810ca53a8d0cfef494890deb8936cb39a98b'),
-      (431, 6, 9, 63, 47, '0b4ae64c9a88e203ae28672c71256ce071afbddfea54de8a04b7958f5e5a64fd'),
-      (432, 0, 9, 16, 48, 'b21da1aca2129bed84b0ec8a134a3dba9ba8b9589b6cb544ae3d9d4a0389ec4d'),
-      (432, 3, 9, 16, 48, '077687d07b4dc4c8e8db116614ec65e45f5b804e9d8b8c2125f43a6d84cd7578'),
-      (432, 6, 9, 16, 48, 'd5ec8cd2d9a9ca4f817ce2575a5c5ceddb108f8f4deca17448cbe35f3b7bdd6e'),
-      (433, 0, 9, 17, 49, '37a6611d3c442b9db098a22007489cecc37ebe7baa3ca8b9406fff07641203c4'),
-      (433, 3, 9, 17, 49, 'dc1a953491ceffc5bfeba4b250cf335e61f9e5acf7ccec9c698602c495d1502d'),
-      (433, 6, 9, 17, 49, '122fca39f532622a85d8be67ce04a1541935961016ea4dc0b1fe62842461075e'),
-      (434, 0, 9, 18, 50, 'd595933d355772bcbc76c45b679e15331b1f5ed90a9eeb82b92990ad32755048'),
-      (434, 3, 9, 18, 50, '24963d4262d76b41496246efb25c5a7c4b7b2b13977e6b21ed03a457810276a5'),
-      (434, 6, 9, 18, 50, '4571302b6bd8b71e6c95a9ed6ab6c10e82eba9b88d25da6eca71c25da893860d'),
-      (435, 0, 9, 19, 51, '4e636533f79064df91abb12229aef36d9185d62136b6c7a07d0dd31b397a41ca'),
-      (435, 3, 9, 19, 51, '009c6aa586bb3cec1f6f87a60d210883030a6dd8d657d97a3fb3df655de80057'),
-      (435, 6, 9, 19, 51, '33dccc836838f6172592eda9ac151de28822e4ab8219ce25a45da295e19a79fa'),
-      (436, 0, 9, 20, 52, '621408443c9bbb93e7b4eb2fa059639a780def34fbcb888ad5365270beae7c64'),
-      (436, 3, 9, 20, 52, 'b30cb805c1b361b6c11cec409be889fb5fab543cf9c1f5089cf3b30defbc7d7d'),
-      (436, 6, 9, 20, 52, 'f7eefc6d1c9314697a88302c6c34cb3cae948b31aef54711a83b2e341e919408'),
-      (437, 0, 9, 21, 53, '61d895a98916d5ce627142b88f59e75e70cfac8c55f56553d51978c7460514eb'),
-      (437, 3, 9, 21, 53, '8c2548342b033bfc92cec5920c0f056d5cb3eb760d9c9593176c3ea65ed3de7d'),
-      (437, 6, 9, 21, 53, '5137168b2ba622130779c3e43bc9fe796048563720fcbb73ab84c18d3b5681b0'),
-      (438, 0, 9, 22, 54, '3071e8f3433f85d501a9ae93ec0658b3243fea03a46b1f34b311be6d5342da11'),
-      (438, 3, 9, 22, 54, '5083fe8d9f33bc77ecc094fdfa9ac43e074d0aa15fc49aa788e73c7076c393bd'),
-      (438, 6, 9, 22, 54, '6701de08fefdda487bb3ee82d3583acdbfc6cb74614af879e3edaeb3f093de7d'),
-      (439, 0, 9, 23, 55, '0d8c9ed72e345c80a138e07972bd9184f6745926fbd6c0406145866ce1f3d034'),
-      (439, 3, 9, 23, 55, 'cdd7f8ec2475bec5d54931c7f3ec6419ab67cd27f6a0bcf4e1b0c2e1b380cf43'),
-      (439, 6, 9, 23, 55, 'af522f6271683b4a82bee1f522b1f66c93f5a54a99b0e4561a4bd9f89a76f8ff'),
-      (440, 0, 9, 24, 16, 'dd2ae60374932ea8924ec2f0bb4f05938d58b859f9e7994dfdd99a2cb89818c6'),
-      (440, 3, 9, 24, 16, '5f0d21451e73767d53b53db833b0d773ce5b9ad1d12320127e2b3f716ab7e80d'),
-      (440, 6, 9, 24, 16, '7f376e63689b213474d3e5bbddbeb23fef096086fe16eda441bea0d418425d72'),
-      (441, 0, 9, 25, 17, 'e621cc59a48049d835c0d191dd79706998ba7d0330cedf79c9f05ea6c664c663'),
-      (441, 3, 9, 25, 17, 'a12b00dade1534de3af7ac679b8534956443226ac267bba4a5466dda3a72ca22'),
-      (441, 6, 9, 25, 17, 'd95191683df1eea8e2a5773e04ae0a0fe5dc360c4bad52699d348e24d415de65'),
-      (442, 0, 9, 26, 18, '16c4c65dfc1982edbbb9dd4e22db3e5418dc979c396d266f70547cf6433fd4ab'),
-      (442, 3, 9, 26, 18, '61ba96cc68733ba7916c68dbe61df1e4acd3c0682e4609dbb25dd9c30e60ecee'),
-      (442, 6, 9, 26, 18, '14fb5b6f8d3a07d3297dd5d5e785a1bcf8ebfb34c3abb4cbec7c02811a9b3d58'),
-      (443, 0, 9, 27, 19, '8a6a6fce27594cadf91a619bfe15861f272f58b3660094efd585d11871f5ff5d'),
-      (443, 3, 9, 27, 19, '4fa2294d4e9a23b6d773131bea5ef3856c32281f9aef5d0d93bb1afb2f1956fa'),
-      (443, 6, 9, 27, 19, '062299a64181a10f419fa1954dc7a17fc71e5473e6f289753cf9a70abda0263e'),
-      (444, 0, 9, 28, 20, '626169b423c576383e13f62339e2918cec0751bc3cb79cc2cd744c871547664d'),
-      (444, 3, 9, 28, 20, '341db0a065d9509df83ee13b211d94b99f2377cef0403b0a6d472f5a9b3accaf'),
-      (444, 6, 9, 28, 20, '9efdb30496a04f8a86bf9b4583fd4a7463917614bfa3bd2e84c0ac1b277d63ee'),
-      (445, 0, 9, 29, 21, '0fdae589dcea0cd7fcbd5689729b92d9a1313c447c0425d0bc99d44ed412c47f'),
-      (445, 3, 9, 29, 21, '1185fc2df63ff37db9f26f69c68e1b72480cb864ec6ce94d26d9242c433f701e'),
-      (445, 6, 9, 29, 21, '6e4e61995703db009498044f81c460e1c3b107f76f06988408da351363c949ea'),
-      (446, 0, 9, 30, 22, 'ee3f02a6f9c59309388ebfee97e6282976b09596e64d84d132f1106c5ec09c35'),
-      (446, 3, 9, 30, 22, '0451a510b7d38bb2321818fb784bf6992fd5396063fdf85e427a456e240b10c0'),
-      (446, 6, 9, 30, 22, '1a69085b9f9ce3d5da5afc2dfc6ca966c53178b933d813d871b0e2f52ca75429'),
-      (447, 0, 9, 31, 23, 'e80d78aea5531da0c019ec4df0623eca63ab967775920c6d74c6957bb022d665'),
-      (447, 3, 9, 31, 23, '8e5a21a86c737bc8611cd693b704dc1fe0c59ee09dd97f3a663e9b0dd25de3b2'),
-      (447, 6, 9, 31, 23, '9a20c3ed5964c21c954c216d4b0a5a0a93da6dd69a2b2b54116c7fbdcedf5f70'),
-      (448, 0, 9, 32, 24, '4b80a9c0ceee833912b21d4521cc39f87e8144c96820a8fb3e4292aaef493d4f'),
-      (448, 3, 9, 32, 24, '3f06046ea8814b41b78146604572b3d2922adf2e593e640b2b97de57731d8e9a'),
-      (448, 6, 9, 32, 24, 'de2a7585d90de23253bfe5d05487195414fbc983745ce6e17da79437d6747860'),
-      (449, 0, 9, 33, 25, '3c5d031fd21f877123a6df8b6376833ca121582b92fd72e87a9481e022cbad12'),
-      (449, 3, 9, 33, 25, 'e85f4c93d087c209071932847fe835cd9e241776bba1dfb5a3bb7d67512ea4b7'),
-      (449, 6, 9, 33, 25, '4edca250ffe50c29d42f3a7e6dfb9df07d6a7a094ccec7017c8b05ce7cfd13b4'),
-      (450, 0, 9, 34, 26, '85124242095bb59169c700737247fb8171c8bfe27eb164b887fc3e92ab394c37'),
-      (450, 3, 9, 34, 26, '7acf5f8c6c04f4b7c1b301b59ffa48859a7e12487c2e33d3dc27b0756aabff66'),
-      (450, 6, 9, 34, 26, 'ecd9fd9824f63e056dfcfd1883ce823f87780bf5999dbe0720a2b918798e7fd1'),
-      (451, 0, 9, 35, 27, '552a613adad24ac973cd2504dd66cf7e9f0b26ae70eefdf865ba1175a12c6c8d'),
-      (451, 3, 9, 35, 27, 'c59a6f883797b584f37f3519d8cd7691dccca9eb0fe9e0ec9d2624315d9d66f6'),
-      (451, 6, 9, 35, 27, 'c7d28745c8e903ffb36c31ad3f2bbb88e147e4ddc8837df1f255df9d715c1d0c'),
-      (452, 0, 9, 36, 28, '5462828950e74d275bc9671ea8f7ed024468b7f498482a89afb2fae804fa3f99'),
-      (452, 3, 9, 36, 28, '19688b23ccdd250bc3f0d37d816d1f1891bd56b4b2a9c34d75810f664ae5fa66'),
-      (452, 6, 9, 36, 28, 'cca658cdb04b87855ee09857cc4169fd42e2ee6d902df4785873a4224d21cc7e'),
-      (453, 0, 9, 37, 29, '1e14408c7aa9c74a31801aea7c756a628c0a9f1a2bc545acbd952b10b6649692'),
-      (453, 3, 9, 37, 29, '1efebe8ef8ecee8c99cb7fc61d961fdbadbdebd33872d4083cb9f855bee64425'),
-      (453, 6, 9, 37, 29, '52197e8ae9ea8770a8008348266bd331b3d71bc7aadac8984d424a20a2da61d3'),
-      (454, 0, 9, 38, 30, '0f68c88ba384c722e4e442e7dcf600efbf669439ea5dcd93e62f3965b427f77d'),
-      (454, 3, 9, 38, 30, 'ca8069856120fd53ab93928060b945524e6a2a5380b511ceefa897a6f33ba162'),
-      (454, 6, 9, 38, 30, '798b9e87acacb59ea8fac99da9e3101e97ed9ffffb058a9ce8102c69765fd374'),
-      (455, 0, 9, 39, 31, 'e220d17fa2eab6206d38d02af5f2667b4d8a2560cc8ce973f18b2c8b3fc6595d'),
-      (455, 3, 9, 39, 31, 'aca121d8d3d360d0df00fe6f566766272cf00dbf3cd397e94dc58f58901ae0c0'),
-      (455, 6, 9, 39, 31, '5bd7551316acc9aeaf8ff2936cebfdf55f9c1c3ea1723a069a545d55449296eb'),
-      (456, 0, 9, 40, 32, '58b3806c7133d5626ebb9fbc6797002adcf7dcd4cea3d8fefc2ff8e70aaf9a46'),
-      (456, 3, 9, 40, 32, '43de8ca267748e64fd88511ae0239677af6408a42da245f710c7722cf2d51137'),
-      (456, 6, 9, 40, 32, '8b9b84420cc21af1a29c8efe4c70618b27dacdbec017931ff9b2c74990d1c6a1'),
-      (457, 0, 9, 41, 33, 'f41b5fda2e38e769808004fb7d35cd79dd0e904b5f9daad84afbed617ed25592'),
-      (457, 3, 9, 41, 33, '912be506f5c47b99a2275d04ac7c2702b9cc13db0acf1bb4a992312ac405160d'),
-      (457, 6, 9, 41, 33, '591e676784fc3f45e00600f7214c82da9d815bd10bc276aeb4b1785ec8b175d2'),
-      (458, 0, 9, 42, 34, '94e722b59f5a59f159d1a9f9f13be9ce8e4d2aa88ab01363443f8b197baae1ca'),
-      (458, 3, 9, 42, 34, 'ada5104fe470f805dd4cbd274fe14c4125c4417f1608e530fd792d6efb93a5b3'),
-      (458, 6, 9, 42, 34, '2d15ef93d716360a174860693ffc1c571687e21ff224013eeeabbe43929e970a'),
-      (459, 0, 9, 43, 35, '7df74d6bf2913999b1b2a62f7cbab368648921dd9fee750c3a2ff281f88a737d'),
-      (459, 3, 9, 43, 35, 'c360dcabcf27c605aef06a2bf72cab243d8b34ff49b7642f5435d688a714bd54'),
-      (459, 6, 9, 43, 35, 'caac45c6a0f38b8e9feee5c46746b6fb6be11ec38a812526d4e20476c2601e70'),
-      (460, 0, 9, 44, 36, 'cf6da6dadd9610dd8191a042525f891d2b9599412910be27718770d7d158d675'),
-      (460, 3, 9, 44, 36, '770dd214e58abc2dfdcd419d8435553503e32c955073500fccc45b3d7d40568e'),
-      (460, 6, 9, 44, 36, '2ffa3d8a07bc6bbb3a69c7ceb53074f369ff092592eacfe81b08b14ae2de874e'),
-      (461, 0, 9, 45, 37, '384cb527946795d42cccaadae3dbd3cd8525962230245d946272ba2340a03a06'),
-      (461, 3, 9, 45, 37, '2774c5c3cf070bbe6239704b3c90773ffae86479398cd27544a8181f447b9e1b'),
-      (461, 6, 9, 45, 37, '95d997b3351558cc193d18c927bc6a467ea7d2832c86acceb3809218a99a0609'),
-      (462, 0, 9, 46, 38, '9c7dec88e7f5c4746280fa1a1a379bc125fb7cea3092027573c225ecf9c7a9b1'),
-      (462, 3, 9, 46, 38, '047a30acea1a8db63208a04f57e7194fe1fe5170448f9dbff8e0e1405e1a6fe0'),
-      (462, 6, 9, 46, 38, '29750ce1ec51189d8bf521f696ee6d9668e02a1ad6f58f0fbcf3ef07f61654ed'),
-      (463, 0, 9, 47, 39, '3b15ef06ed77133748ddc5adc0839a9b0349387b04472f8581bbbdd5df64fde3'),
-      (463, 3, 9, 47, 39, 'f46b32c863e17513ed59e0a9bd46fae42b13866e1da1c819598e827f3ec952be'),
-      (463, 6, 9, 47, 39, 'ac41f4fd421de9fd7454c338f4cd607cc33a398986fa0edf1a860fd91183a85b'),
-      (464, 0, 9, 48, 40, 'c6b0f63595d4420ab74a0f57c107025e6c228277045146e681b26a6306f5a62c'),
-      (464, 3, 9, 48, 40, 'd8d6ceced767f38c51d71489967757a346097d7558fcbf1943bcae9bcf0ca4b8'),
-      (464, 6, 9, 48, 40, '8beb88385bd1ee0a0f2606304c3035661a63e2864c6528540b28176770ed5356'),
-      (465, 0, 9, 49, 41, '5c8dc49bbb8fc7b263c79a23e7ff725c0abaf138aff748792bd76403422bcd48'),
-      (465, 3, 9, 49, 41, '9026ea4a9f0c2b05420f936be07184478a03ef4fed39e6602727aac57a5beac7'),
-      (465, 6, 9, 49, 41, '372df08777358c6c863e0e543065d7c85b0e96683b4aa93f880c70da34e4ec1c'),
-      (466, 0, 9, 50, 42, '6b834f04cc5fbc0361c75261c63e00f81fae41275e1dc9c46f0394b25cf4c10b'),
-      (466, 3, 9, 50, 42, 'ad58328e596e6bb3546d48c917b0978ea99d2957f114bed9367c95bfe246ed81'),
-      (466, 6, 9, 50, 42, '115102301828fa7e25bbf2e92a56c308e22e2c41bcb674e65809ea9a832e0eeb'),
-      (467, 0, 9, 51, 43, '564bfbaa5c00876c064c0b31b9ccec1d8082c65cef2cfa20d1d8dee57cf1b205'),
-      (467, 3, 9, 51, 43, 'd7e1d342c60985e7edba445f4937280f5d5c5310c3db042ec644ce554b8a0d32'),
-      (467, 6, 9, 51, 43, '3e00a60e13311b6f403c79f04dc9294dff6c0652cb125bca5930eb95beffae95'),
-      (468, 0, 9, 52, 44, '9d6a3b67a87354064a75cb916b1ef04a5996f8ec0c69810f1c2ac42caa7d9db9'),
-      (468, 3, 9, 52, 44, '2751f0ce6f2261957cde6ffa18247ead464011b6c497bcd0e74a73b59ee13492'),
-      (468, 6, 9, 52, 44, '2616581d8eb9c724e8b9f8160e4d7b8179a452e0339d226aa43f34ae1c2b8760'),
-      (469, 0, 9, 53, 45, '6d5f73e86cf42990296d8afc083dc7b06dc6c34b36341410901c2479c61fb6ed'),
-      (469, 3, 9, 53, 45, 'a16842a2f0d3cc06771d0f80dc78da40b73d8b396ecc7d3f208999b5c99fdeba'),
-      (469, 6, 9, 53, 45, '27362542baa014308ec8d1b92e8a473cd68308933c39fab8edab587a5fe6df47'),
-      (470, 0, 9, 54, 46, '000649c18eb0dbbeb65bfc75859734937592c0cafa70ae93773487d4b41d0f6e'),
-      (470, 3, 9, 54, 46, '8fe265d76af9b9873fb18ac9c93d6bbe0983e1827b82d7fea782fce26ea59829'),
-      (470, 6, 9, 54, 46, '9c135f3270a390f0cb78ecebbb504cb1a4c11d9d3bdcc024280023ddb574cdcb'),
-      (471, 0, 9, 55, 47, '48bf9e055aa1838f2125b557fbcd8ae06f6beda7ef1ff1a57b3a74705ec87ffe'),
-      (471, 3, 9, 55, 47, '47a909d9cb69dff56e45cc72818149719881ff98a134a1e9d25d31e7afd83342'),
-      (471, 6, 9, 55, 47, '435092954e82cc9317dd02722d5d7b6602bd7848fd72364099a845b8fcf9d7cf'),
-      (472, 0, 9, 56, 48, '9ca7678e5dd78e555c1da2b3e42f3933e7650a412f378e47a84560c5ddeb5183'),
-      (472, 3, 9, 56, 48, '2d840dbe32d6b6c4a088ef8fb9dbc01907dfc34368383a3f9a6100474fb1e744'),
-      (472, 6, 9, 56, 48, '2499a30ae6d7d85f01d6793e11f5eadbd28058d2104a2e40b4231034863db45d'),
-      (473, 0, 9, 57, 49, '4afa6e943bf8b5a3f8ea5622000cc4f6c41564bf3a940dc0e5309fda0b44957b'),
-      (473, 3, 9, 57, 49, '2b9817fdd216efee5cda37cbc1ba197fba868725fb902ddd5dcd7ded7739bc7f'),
-      (473, 6, 9, 57, 49, 'dfe47642dd6160d7eed10498d5b1791be90947419e86a1e0f57552c575ce53ef'),
-      (474, 0, 9, 58, 50, 'bda264baa7126ad97cff34cfa2d6e1bdadc293c9b92113ee5d89378e2bc30533'),
-      (474, 3, 9, 58, 50, '3fb1a678a71eae2f46786a20bf4f991e15e295a458cee236806cd74bfb2b5969'),
-      (474, 6, 9, 58, 50, '590f8a222e555a8fdb8122992b06d4523c2fd7b13ef8320d02c2a7491b710081'),
-      (475, 0, 9, 59, 51, 'ff3849a090d5c46f90603f23295a43184e0d3fa5e57c397a4e2f79cf965c10ed'),
-      (475, 3, 9, 59, 51, '408b8337a05b27c80a7669636a55be5f03be46ab37d3afaf96f9e1e6f1be2799'),
-      (475, 6, 9, 59, 51, '5257144d7e3c51927b4d4294842d2464cc84fd3add87eeca3fa4433ad3aea65a'),
-      (476, 0, 9, 60, 52, 'dd06e20d2943d3e3b6d66f610f3920dad9f3c991bcab3378f9b831b5130a9b88'),
-      (476, 3, 9, 60, 52, '7b40287fdfeede9c714617830b9669a367b1d1dc4aaedcdd9b093d6f0485ddfd'),
-      (476, 6, 9, 60, 52, '99272dd3f81970d37bcf513798b185e8814bf7aaa85d424e141763c0d56b9308'),
-      (477, 0, 9, 61, 53, '5391a84161c686442b855de69fbfad4e3fa6d73c35c7ef6643d341326bb2fab7'),
-      (477, 3, 9, 61, 53, 'cc7b054b32594152e84678c3888af62977e5069b371fa32e70a744f268cbbb0a'),
-      (477, 6, 9, 61, 53, 'f841c03bf5f4bde1a1ea1eb8590296cc0f351d50429a9b53ece3846f572d4028'),
-      (478, 0, 9, 62, 54, '6b9daf4919308f779c4bc609711d2c16497ef3df03e097a07bcc76e66cf79710'),
-      (478, 3, 9, 62, 54, '3ecd6be68fcf2c8dc46c2f37816e9dccde8e3bcf02b0ad33b09087dc965ce5c8'),
-      (478, 6, 9, 62, 54, '5fa37f9dd8420d484b6ffab0b92a44d2dd09a5c31777825a81a3aa7c0bc75567'),
-      (479, 0, 9, 63, 55, 'f90316a1360afe18f1f9eb35a8da6e8009f734170088514d9e526c20e2ba1ea4'),
-      (479, 3, 9, 63, 55, '61e51e3e80f16da1e5c724137aa52a7b983c721dd1d9f4fb502aadf956b1d338'),
-      (479, 6, 9, 63, 55, '54dd1a09088fa043c42f23d8a71af4b984e6e3f6c73a1250a36c52113303096f'),
-      (480, 0, 9, 16, 16, 'aebc8b24f1962999b9999540b7526bdfd5b68516256a01557b03184b271f829f'),
-      (480, 3, 9, 16, 16, '7ac0fd58a751a455ca8f247b2692ceed310075fa75f9bfa390d532571f96fdde'),
-      (480, 6, 9, 16, 16, '25c324662f6cbf2cecedbbffef696a044d0d7f16c65c2e3d9c7db7de9a4a4ab7'),
-      (481, 0, 9, 17, 17, 'a398ec011e14972eb0fb6663e38bae28b5ebb992b36b02fd4d14fc07cfa5d169'),
-      (481, 3, 9, 17, 17, '24728b444a4ea557f3c6a7bb6b4bd7d0caee50a81000139ad245c2ee2c5c0e4d'),
-      (481, 6, 9, 17, 17, '6125013f73363026db86163a197ac50e5d81e3bccd6a14e9a868fc7e9e0f649b'),
-      (482, 0, 9, 18, 18, '5a873bf93ac6d720c8e9420dfbaedce0ad9bf63448a34dfcc1fd011732d1e67e'),
-      (482, 3, 9, 18, 18, '231d81b8bf7288bf51c6832a939c60c9439528c653362851289baf0d42185b9b'),
-      (482, 6, 9, 18, 18, 'bbf45bcc1c262403fd6164f0527a63c2adc5c03272f8bfc0fc320727dee4b165'),
-      (483, 0, 9, 19, 19, 'de070b78a042b1c0d11d54beccf820aa1469342c9b84785ed0142c8d304ff60a'),
-      (483, 3, 9, 19, 19, '4003b5dd9eb3dc76cf25cc0d7cd09acc8e89815e18369ee75d8d992893d4c73a'),
-      (483, 6, 9, 19, 19, '314c98cda786bd4ab412e7eb52611d642db70ec5e0cee9b009c65b6120905909'),
-      (484, 0, 9, 20, 20, '39bdf1e78a31647d3e92c617e307e7279108cffe05f01c354ac6365c5260838d'),
-      (484, 3, 9, 20, 20, '6ab38519ade3f27b5a7145d6e71a64fcf03652e0a002adc9ea221d4480778347'),
-      (484, 6, 9, 20, 20, '7c7a5c8d5d5a9bd0b59131f7422de901d341b9de460da20b3ce67428ace872d8'),
-      (485, 0, 9, 21, 21, '3eee102276555b1fb92efa4294bc15ac6a11b09d1197d517adc0460fca089d29'),
-      (485, 3, 9, 21, 21, '6d478b13a06997f4e9212b7edf57a83f7f79b8405b817f6638fe99bcf33c53c7'),
-      (485, 6, 9, 21, 21, '4d7a5b3dff9e156b158ef6cb417b2208d8e9b3107ae623629bfbec0601825229'),
-      (486, 0, 9, 22, 22, '41cec33c3c37a47eaf16b3a30c8c6d44074be9bfb67bcedaec66205ee32ac311'),
-      (486, 3, 9, 22, 22, '3a9b5e3d5acc7c61c1019995e68f89be8c19b33c60254c78bd5fbddb8b4a3a5f'),
-      (486, 6, 9, 22, 22, '8b42523b8de3da4c2a9e8032c94342c2c52c9d2739bf9348a16a21f123c0d442'),
-      (487, 0, 9, 23, 23, 'a2885ee445b874faf859c8f62f847888b457840246296097cc8d9559767e6e83'),
-      (487, 3, 9, 23, 23, '9ffac040b35953e006d7aba6cf941130722ae8f9843b880bf3967dd3ed9b3cfa'),
-      (487, 6, 9, 23, 23, 'adc02462eb57b9f9b3f0c2f0b7f65d3b94e2319e56c7da9315a73c9b1ef81fe9'),
-      (488, 0, 9, 24, 24, '6c27f04b00a0176c3c716cdd55142f77b3c8280d8a1e98d78b578b1030d76b2d'),
-      (488, 3, 9, 24, 24, 'd1e34a41ff94f5eef4873338bca39e8977276f517b69ad94eee7644cd69b67b9'),
-      (488, 6, 9, 24, 24, '5881ef47a0de9b950320cfee5253139bd046068dad77ef4ce658529b439af192'),
-      (489, 0, 9, 25, 25, 'cd0b36e889b5e2141f3c4335ceb7483e44f1adb05fe3f2322758a7c9c8279bf1'),
-      (489, 3, 9, 25, 25, '96a60704ff0c9191d4e65e760d7e13c9997fc264a5d0db44e62c68135e534fcd'),
-      (489, 6, 9, 25, 25, '50c184241da4cbf99b2751d2f4d5d395ee6329838fe2919b89b8cd56d41253c3'),
-      (490, 0, 9, 26, 26, '000f75649100f6f62b382bfa01065701fe96c2cbd10938cc6c2b31fb254f4226'),
-      (490, 3, 9, 26, 26, '35d14dad81542a045fc06c713655bf730a0e9fe1dabb879bf4eb75e34de24651'),
-      (490, 6, 9, 26, 26, '0ea8275ac0bf626f637548a134a26acce2975a63b4783f8fab78a9ce78fd8056'),
-      (491, 0, 9, 27, 27, '98e0f56bcec4ed31b75506fdfc0f783a2f15b2b2dcecc6cee927746460b7f8c6'),
-      (491, 3, 9, 27, 27, 'ef4a359e7a9ec1d176d09e4aac34d59533206d7ca363104ee538951a360ba150'),
-      (491, 6, 9, 27, 27, '9673a0b8896008b2b4c45ed1ed4a111ad191ad72ebc47169cea4329e304329dd'),
-      (492, 0, 9, 28, 28, '9ff24839147715609763dce400069a882957433b8c71ff62c1a2c4eb4afc9a64'),
-      (492, 3, 9, 28, 28, '1c143f3388f59c9da153a328c6e8754b0e357f767c9f88da4215dbc51f154ffd'),
-      (492, 6, 9, 28, 28, 'b8c30407f788509562490a557275c1ded102d0b8e5315c662bafebe716cc8abe'),
-      (493, 0, 9, 29, 29, '58ecd06fa093635b0901d6066be149c0c773ae50d743f839249730873c86fb72'),
-      (493, 3, 9, 29, 29, '506b13084f70db4cf04db1f7d2753bdc272abb2dbefd58ea35de888ea0ea1a14'),
-      (493, 6, 9, 29, 29, '29835544cdbc003ed3e87aa3b65e74805797fadf7c4ff1e2cdf16cb9a345e04e'),
-      (494, 0, 9, 30, 30, 'f36a17baafd51e4d0ddadc493c61e658ee7a761e136b8524cb6ace0c585f3d40'),
-      (494, 3, 9, 30, 30, '6cee54cf3e702ed396e7c54a98c61c457a7049f7214ec7ad182e94259b1b413e'),
-      (494, 6, 9, 30, 30, '1fcdda206a6f60e1b890edfb37ede27edf85e478ce8eee3a6be0eab467c62c50'),
-      (495, 0, 9, 31, 31, '424d4f9d97cf52fd0334f6ed2a30676a304d25a7cb1418cdf8d13e7316c45798'),
-      (495, 3, 9, 31, 31, 'f34ab9fea5ef88f4b9c2a85db4e9c4d5eaf4f7d606500dc5787175dfd6406534'),
-      (495, 6, 9, 31, 31, 'c570ab8cdf2e02424ccbe506d481d41fb57cf0fafbdb32417e15d3218018d672'),
-      (496, 0, 9, 32, 32, '923b5dd7accdcb99a89f16579993bc132b5a82bb52c234bbd8bdc9ce4f5cfdf2'),
-      (496, 3, 9, 32, 32, '02990b86f93a22ac8ad926a2776135418df5bc9c548264d615f81a8722205efc'),
-      (496, 6, 9, 32, 32, '805188ba529de92a391451d12b6b9af2b9992c833d486c17e16b35832bfd6026'),
-      (497, 0, 9, 33, 33, 'd66ac0215f3a5b92cad882e23b0d77a5cf327f3fc3d24faf10436375b1780df0'),
-      (497, 3, 9, 33, 33, 'b8fa811ecb7b0827cb1117b61df4c0351971c5cc4d3915c8ae4730c19d215c81'),
-      (497, 6, 9, 33, 33, '8edbffd0545a519d337209987a5456e1b2c556f787141cfa931b6b52f70d1d54'),
-      (498, 0, 9, 34, 34, 'cc22f5079686f50e679e3775fd35bc8d63ea301fcef031219f6cfdc2cc7f3605'),
-      (498, 3, 9, 34, 34, '91322d1db7ea7410c72004c6debb7d9c37ec0e65580cd38b19bfc8726015749d'),
-      (498, 6, 9, 34, 34, '67373a0dc04f6434dc7a4194ff7cddc70cbbfdefde9584702990f19a2c5ba1fb'),
-      (499, 0, 9, 35, 35, 'e4c3bc3276cc24719883aa284b8064a8ab0644539d8b8a18abe7f4262eef4c3f'),
-      (499, 3, 9, 35, 35, '9733bac7c27f2a8dd6e5918e904d0ee13161cee699714c96c114ed548e920f9c'),
-      (499, 6, 9, 35, 35, '814e5e96737e7dea8e38cc02d85b4774e04fe5306ef54c80349dc2bc6a6d7350'),
-    ],
-  },
-  'q_gif_anim_frames': {
-    153156: [
-      (0, 0, 3, 24, 20, '15cb244e5ca506f594525ebbeba8ad706838dae22ee2f8875d46ddf5f32e5066'),
-      (1, 0, 4, 25, 21, '40882abd82a2eed29515e499ede195220ce1be43d1fc1a05eca5026f6b3f0c60'),
-      (1, 3, 4, 25, 21, '4e34bc63f5bcd4e10c4009a78693bef40e957e94fa7ef4128703b3c91fc8e2ba'),
-      (2, 0, 5, 26, 22, '6f89b647124bee921d70c2446fba33a7c8aec44d59dddc7a89c902c32bfe40f5'),
-      (2, 3, 5, 26, 22, '9ea5bb585345b9ea106323bfb52fb894188d3e53816cb7c2b768d2b1b81023de'),
-      (3, 0, 6, 27, 23, '810a2f7ceee9b88806f1e755a9256f861ca7f234cc704147d27299c739ba6576'),
-      (3, 3, 6, 27, 23, '488c04b903ad3c88f5448a5d4024229e099c05dd9c0fd90170e027259c8be8bd'),
-      (4, 0, 7, 28, 24, 'cf030a04523a2469274d5d159793f73247af8dff78356f1e74008e05e0fcdb92'),
-      (4, 3, 7, 28, 24, '93e1b83bd1cd4db8a9249bfca02ba64df6e64e36a145a8430a5f9febc61aa440'),
-      (4, 6, 7, 28, 24, '766ece225deaa43360637991d4a44b2dd68d949093f547d5dccbdab1ad6e4d11'),
-      (5, 0, 8, 29, 25, '35c02fbbdc86c87b70546cd08f41ff7e4071c176f7f417a25ad9ab8394a04420'),
-      (5, 3, 8, 29, 25, 'e83cb5a92834ddba9c5c0d64ebe620ce3fd23329aae181bcc9a3b386d1f3aa1b'),
-      (5, 6, 8, 29, 25, 'a2d8c5100b4ba9f9e9f32816990ab5cf6785874e3fa2d2663f8ed39446b49aa9'),
-      (6, 0, 3, 30, 26, '7dcdcc80047724b8633ac44b5328408e78c3d81c02e997e0adc716d3da66bd12'),
-      (7, 0, 4, 31, 27, '59ce02e89c91a4e75439ac739f4c4aabfe6260f285adc4971cd334e0cea630e3'),
-      (7, 3, 4, 31, 27, '95c381a73af50cb21f2431f556253485dccd7b7f0c289834a915d1f4b134ee86'),
-      (8, 0, 5, 32, 28, '07f113a2f61079300ae25d85b189aa8dda4eb492e9d780076c4671700f4f9d37'),
-      (8, 3, 5, 32, 28, 'a1619f2a8f1c417f8318b0968e3b52ad087023e3bf50547d9659d5db920a4e1e'),
-      (9, 0, 6, 33, 29, '074f1b2570524c541c5157cc7a6611be6cdf6ad0d51737097df09394a756b332'),
-      (9, 3, 6, 33, 29, '3fb34fc4da7d2780e85a9c86c70369fc9df90dac2906d08d7bb428791995bd65'),
-      (10, 0, 7, 34, 30, '0f1129726b69221b9ab31d15043f03b8436e181df7abe7b5adf86da17560be13'),
-      (10, 3, 7, 34, 30, 'f02da92007b25db60280a89fe01ef133e8bd14c9a52c531ad3226dfabb25424e'),
-      (10, 6, 7, 34, 30, '6c3f0ed0d3d87e34e9e64143ee01a434ea25d2eeceaf21c2581e8890830fbbaf'),
-      (11, 0, 8, 35, 31, '76b56d77971227646b5ba5bb1796f4a0e695868721817dc28b3af91ddc67d9e2'),
-      (11, 3, 8, 35, 31, '3e9f6a8503e1a7ef8259422032e7a7866508eeb20ae1c79d7d47421aa233c67c'),
-      (11, 6, 8, 35, 31, '315def84280db80e8954650f276764b470e64883b51671c4e8f9d5dd983264b7'),
-      (12, 0, 3, 36, 32, '0923eb824025defb53421f38d2cfa73f08d447660c6fc2c5430b46729b92598e'),
-      (13, 0, 4, 37, 33, '3d5ce98149bbeab3f909b792e73894783d4a92df73f99fb1e2e3817891210201'),
-      (13, 3, 4, 37, 33, '725c0c4c9bf5e6a8c1f020fd441511849603d6d77983fc29e87ed14b1876eb41'),
-      (14, 0, 5, 38, 34, '088c8386e162b219122c5ed2d4ca6601b0196f053b6ab7fcaa45d125cea7c527'),
-      (14, 3, 5, 38, 34, '6b46765149d88230e9d90dc7d8e63d1a15bd78ec948329ec460e71140f9489f1'),
-      (15, 0, 6, 39, 35, '83872d37e4264f46f1fc9c62cdcf0b60a6e0f1a8a5d0d12fb6bdebd70c7b37ca'),
-      (15, 3, 6, 39, 35, '005ec4686bf70d35df6f023a7320094d2db9ae1753860d74e37f284a608408da'),
-      (16, 0, 7, 40, 36, '8e6fb1c9fb30baa5c102977e5b28b13233bb71ae6249e7c1607cacf4426afec8'),
-      (16, 3, 7, 40, 36, '64fffc00f650ac3b022666f278d380016cc2206362d778c2234b226374f958a9'),
-      (16, 6, 7, 40, 36, 'cac07be6bfec001e8e006a12b83f3fd35b60ce30192049aa58cdad1a8050601f'),
-      (17, 0, 8, 41, 37, '0f8645156f5765ed78f5e79cd1ae075120f163de313f3a8a91d3aae4defa13eb'),
-      (17, 3, 8, 41, 37, '4fb96fc0983a6f523930e8e8d3e9273238419dd7d5ba6fd94e7aa2cb6b80d1b7'),
-      (17, 6, 8, 41, 37, 'de20a990de8fe5f5d1918821ba26712a7368455f4091c5114a47166281fa9ea4'),
-      (18, 0, 3, 42, 38, 'c690a04a7ddf7266ccb63fa613b4b5fe2e000a4ec8700cb0762122515dfff5a9'),
-      (19, 0, 4, 43, 39, '3bff7f0b89aad58fbf13ee0af80d0e0b092f617515dfb0e730b2d237e1f95408'),
-      (19, 3, 4, 43, 39, '3ff1126fa116dacf83dc646ef7c71772b1b8c63ef36382adab44490e176a35e6'),
-      (20, 0, 5, 44, 40, 'aaea76b72e5e437828f769997f027e2f35755a4016b6811aa79cc589b0826f8a'),
-      (20, 3, 5, 44, 40, 'e7fe9a203111d680f8bb2b7eb9b65830b856162f6d7919cc1e6fc6bbbc652c7f'),
-      (21, 0, 6, 45, 41, '87449e970b6109cce2b6aec5a77ddf21d1d2e16e311865a9a05b04ec9adf5446'),
-      (21, 3, 6, 45, 41, '57cff1c8ccd08205837fb2771095cc0671ef152544ddbfe94a5dec8000b03cd2'),
-      (22, 0, 7, 46, 42, '43bed403d7f7ced3ab6b50cf222cb440e789b30a984c4a05053a60db8c1fb0bc'),
-      (22, 3, 7, 46, 42, '8a4a5a1e34273279043c3db1177cbf684f33ddebb88d78201b6b4b847cfb314a'),
-      (22, 6, 7, 46, 42, '7e1fae67357a9d13fb6b1233b79ee46b2695c1f9f968a7d80985edb505516a94'),
-      (23, 0, 8, 47, 43, '78017d39900dfd2f61abb1150f091e615465076fe8faf0b750abc6c308c88ea4'),
-      (23, 3, 8, 47, 43, '70a70264df6b23a32a68a009f062d8c4f3fea395282ba5cd6ced82c9251108f9'),
-      (23, 6, 8, 47, 43, '2823870f4db49ec19204766c1c961708badd4f1bb5deca7f59f5abb9b995bce3'),
-      (24, 0, 3, 48, 44, '71a7b8305156b99e1b7ede2a8e7b574a3312fafc8e8ffa61f866110f2003ce5a'),
-      (25, 0, 4, 49, 45, 'e53dd47810a63fc2716c6e0a40fd4fb111eb4bc0160212327255ec19f16d0086'),
-      (25, 3, 4, 49, 45, '163017d333b5fb45fb5d4eaff7d32b589e62eacb22bfdc4c1a535f1f4b3921fe'),
-      (26, 0, 5, 50, 46, '969fe1ecf61a385455bdcbf74ac0b316512629c1eae2ec49b8322c3c2710594d'),
-      (26, 3, 5, 50, 46, '968fd3e2fabbe45600f655f4f61656be7514cec86adbe12e17490f4ef2596a08'),
-      (27, 0, 6, 51, 47, 'b48c0831814cfd719adf5c5fb53c4da40c94e55700d422998e0bdff327147f6d'),
-      (27, 3, 6, 51, 47, '9562a7931f4f0cb3461813cbe42ef8ec604a63db71a9ebf3e2169bd285256837'),
-      (28, 0, 7, 52, 48, 'cd4c54fcd003a59181a37219a0252f4fdad5ee22f5ce0f3d7b94ef5399758aa3'),
-      (28, 3, 7, 52, 48, '42165d55a8a4db95a83980e9abb0e7319df85f212ed69201429a1d02b2b2435e'),
-      (28, 6, 7, 52, 48, 'fdce814159433aa9bbd51a71c5233dd34bfebbb594c151f13b7fbe97911d777a'),
-      (29, 0, 8, 53, 49, '3f491ad498a5dcf232a8abc96fb32fb9319f48f0e9898f26c36e34ebc69cdfa5'),
-      (29, 3, 8, 53, 49, '0518c1cd5b2d340feeb8d9f9909cf01c86f7c95c297d1a6f2d1878d5f52b6b85'),
-      (29, 6, 8, 53, 49, '22a0b23e4b84977371a4bb2e1d1202bf1d48921514345bb9fe6926049838c56c'),
-      (30, 0, 3, 54, 50, '8411a6e6758d91d9dd735e6bf477d1f8ff3dff265c93aa8b9b05c5ef06a0f202'),
-      (31, 0, 4, 55, 51, '2fbfecd6f8021cbb6f27cca3a184f77c103fd3ddfe9aa0242fb3d42bce5c3630'),
-      (31, 3, 4, 55, 51, 'd22007679dc09ef4f5380c04bd7d1f9c58b468231d8eb2561e69ecb0d67be800'),
-      (32, 0, 5, 56, 20, 'b7c2be55d13c9205e1265c62d5b04ded15d11ed6f575af586d9864127714040f'),
-      (32, 3, 5, 56, 20, 'a4ebfb3763f0cc783676fe2b0fc3f00428eb40b6811cdccedefb3e650f07f52e'),
-      (33, 0, 6, 57, 21, '75a51091b5eebe12b16732cae1bbd20b2a30a98a9f1ad4d2f03f2ed06be87a96'),
-      (33, 3, 6, 57, 21, '14d7d0896778c2ff0902e3c97072f4ecba0a0bbe04c7857fed3b70550786db9d'),
-      (34, 0, 7, 58, 22, '3901aa2e46f07e0cf981030a8fa06e57d8bbfcaf38ec87f3c81c67cda4937d78'),
-      (34, 3, 7, 58, 22, '5f328af7a3bd5f58dc0de0cacc1efbd9416cad4087732e655bdf6ac8cb87b6a3'),
-      (34, 6, 7, 58, 22, '98ddc32434bc13b09dd59fddbc502780bdb8f2914a8e0d438f1916d0d12a058a'),
-      (35, 0, 8, 59, 23, '656a67bb593697ff70b2fbc509ac673bcb830657f6b4dde5041fa06773f80e47'),
-      (35, 3, 8, 59, 23, '177bc6d21c675e8eab6632232646dc982613d3da1f9e7bb40696f7e786e0422b'),
-      (35, 6, 8, 59, 23, 'fc5c850b1650e203de3aec898c91ea2f1b473faab30b7208acdd184f02ecd921'),
-      (36, 0, 3, 60, 24, '539bc820371c598d88f8c97953487fd2ddd81fa7a1902f72615aa53b101baaa2'),
-      (37, 0, 4, 61, 25, '58a385e729475c4febc528b7651d49df8bb59ec40cf483e3bf2b8a2699698176'),
-      (37, 3, 4, 61, 25, '338b1099745ae8d4df4983c9e7d11651ec57a76c4fea3f02c2a4db630b90b77e'),
-      (38, 0, 5, 62, 26, 'ac927108f564f6ac8de4ad709669f56bc83f5301b124977f4dc18c0ea08cbd69'),
-      (38, 3, 5, 62, 26, '16efd1fbfb32346eb3a8fac00b2ec535a1fbe9eb7c0b70146300d804ea785541'),
-      (39, 0, 6, 63, 27, 'ff5a4dd5862ca99d9376dd0e8f9b654ef91a3cce24f426281395bb63b890c0d1'),
-      (39, 3, 6, 63, 27, '92b0db1dd5e876b6cc8c1037da13dbe4ace155d7ea69902164b13a808866495f'),
-      (40, 0, 7, 24, 28, '6052784d8314eb69730026ca4d447389b3f712c14cf95b697f06797cc660e97c'),
-      (40, 3, 7, 24, 28, '9e2bf78821425f9c67e1278c34d6d77c74c38848139b2b5ed1fcae5ffcfde0eb'),
-      (40, 6, 7, 24, 28, '9756ab1732d8fb8c0cc5d47d8536092fc6a781a87449a32436d7636bafa60323'),
-      (41, 0, 8, 25, 29, '1c34cb13fa5f927d678ae8e03f3fc517f80b79f388147cbef5dcf754f1983b11'),
-      (41, 3, 8, 25, 29, 'bdd92b8d95c266a800bcfb89ad59461193e1fd8d0d9ab6ec14fcdc80be3664ec'),
-      (41, 6, 8, 25, 29, '4a7fa88fa538ed871c7f9f223dba75ce1c79d27c1f5a458bbaf36b7bfea53dd8'),
-      (42, 0, 3, 26, 30, 'a70861ce66582417065f5b8058577f98871aa73d4c4088cf1a760b9b3fdfe531'),
-      (43, 0, 4, 27, 31, '86f75fdc95238157f2210e4d201f8c549ad74fa4fc51f2952e35c41479d745f2'),
-      (43, 3, 4, 27, 31, '597783d90ade3162c4aa4da144816ddf4197ac39546ac0aad1eb14b699b86dbd'),
-      (44, 0, 5, 28, 32, '2f1dabb0c278dffe9c035e8a38f82ce857f2d5c7e205cb23d01d3b58481c11a7'),
-      (44, 3, 5, 28, 32, '074c28bf5144d115758315e65478476615082a68afa749b24178209aef23b4ff'),
-      (45, 0, 6, 29, 33, 'bb8ee8f698b99f0dbfe15917c0228307ab54035c7f558eb79dca869040fea7d7'),
-      (45, 3, 6, 29, 33, 'a0003299898b67d32e27045f1dcf763f6a649b06868e605b40867116b1249896'),
-      (46, 0, 7, 30, 34, 'ab86e75013b5d7887b3f842fde8ef319339ed00084f680007ad88100ca5fee2c'),
-      (46, 3, 7, 30, 34, '10b5f8ad578ee7a40bb6cdc8043c17e8110cf05907102d8bdf21181bba9ae576'),
-      (46, 6, 7, 30, 34, '6d8aa707b10f775d531d22612e0f5d751e12a6f9427af97e70b79d272fb41b4b'),
-      (47, 0, 8, 31, 35, '8b8ec239347c801ac84530f0fa42dae7e474cda04360c1e24a218fe7e3e531c1'),
-      (47, 3, 8, 31, 35, '6b12580d2c93faa96d8d4815f53d1166306eeb733709117a59bb40cd2c595ff6'),
-      (47, 6, 8, 31, 35, '156e93e6e2f48a1eb1889b753ddeb20b8e62b939748bf3a6c3043a0621f8ab3b'),
-      (48, 0, 3, 32, 36, 'f78fecfdb11e5fd7d1728750b36e351ed069776fd699d3c9a809a07c0648a55e'),
-      (49, 0, 4, 33, 37, 'd59d9eefe8d564c6c84e6015d8d1304de1945062a3374e243347519e969631f7'),
-      (49, 3, 4, 33, 37, 'f527d345157de8c304e080e3cabb5dbf9e2a3d59d834a6ed94d1e18a4b3ff35b'),
-      (50, 0, 5, 34, 38, '0a3ddde2c932ad02ddcd5e0fd6eb47cee181a54c0c31ae7a1112d06470c3d373'),
-      (50, 3, 5, 34, 38, '47ed7f1c84a512a2dca0df98e0a0e7c7c0c04c885050306e79e29593ea310d88'),
-      (51, 0, 6, 35, 39, 'a0ad2a16cd27e3ed9ae6d16e180059328c74c10e0ac5a4f08f91fcfc967f8fa9'),
-      (51, 3, 6, 35, 39, '73aa2a782822f4ad904aa08f0ef72ae2be9e1e83a76fe98d091f142e38d902e4'),
-      (52, 0, 7, 36, 40, 'fa9e8d7f72c200245fb911f404c5b7a28416371af99ac6282bcfea76f2b4b61b'),
-      (52, 3, 7, 36, 40, '5101246490a46832213598ed6fc37abbf3b36cc8ce646bfe8c42b53a9f101c39'),
-      (52, 6, 7, 36, 40, '1a6d6cd0e1b7eb3fbc8c40aea802dfea711afcec2a641e0eb57ba51f3597f8ae'),
-      (53, 0, 8, 37, 41, '53883b7e09ee37f9c54ea412b8e7f09817a6e89e42278e013a0f4af5bdca5a14'),
-      (53, 3, 8, 37, 41, '140c2f2f69ae3db97ab5010d7f5a3655a236d391c6aee4ee2a85d5650612d2e4'),
-      (53, 6, 8, 37, 41, '30c21004219f16830a8dbb1ac45a1d969b1bead8ed518631fd889a355bf23e02'),
-      (54, 0, 3, 38, 42, '9d1bf61ef91ae382b409ad8166b9d9abcdcc566e461af8b2459ebb634fdb1c35'),
-      (55, 0, 4, 39, 43, '9d9b56cfa50bdb84d6599e9f95fdf46b3306e114d9ae5ccd099fd8f0acbd45b7'),
-      (55, 3, 4, 39, 43, '052f876df609b4ffc6d7907cc9753c66305b4af3c3c07a2eba4d16b136e52a5d'),
-      (56, 0, 5, 40, 44, 'd2a264eb36fd274da2848fd3fcfee2832dfa3eeb50e7755099a76b6ed4fe9be3'),
-      (56, 3, 5, 40, 44, '76675681d07cc12354122846d4fefb5e2273a206bd2fe89d5890aacee4c8e121'),
-      (57, 0, 6, 41, 45, '01851ad769c611c9b27cabd184b338e27890184f4a7a307d81b65fc559451266'),
-      (57, 3, 6, 41, 45, '7d74692451133e37e08b621bdf4e967c3fd021eefef5ebe3888ba0fcee467b1c'),
-      (58, 0, 7, 42, 46, 'fd4331f8c4ace8698a63d9a6f83acac99ed5eb4009a75dacc49ad01ef6e174b2'),
-      (58, 3, 7, 42, 46, '008fbb9f53a3d9a77cf52c6fb5a5c52270fd5e1085f6ca33c408df4bd2fb195d'),
-      (58, 6, 7, 42, 46, '8d137bfd351bc55b37e306f8c38d5481b5239c5e3efbf54346d6d7a57955fa7a'),
-      (59, 0, 8, 43, 47, '26bc27dfa69b19853222fb9b8546dc5b498cbfd7680431f1f0627c3802d710a7'),
-      (59, 3, 8, 43, 47, '22888e26916ad693a9f110cf462697497c1d3d7b60166da4f4d31b04ae84685a'),
-      (59, 6, 8, 43, 47, '4c98a51cbc86acbfa8be91ec8f12369f83d8de8490a8adadb437475b76f5c0a7'),
-      (60, 0, 3, 44, 48, 'a570700b7954c91ec7c256d7bc0c0f0ca03ed345a4d01d18b000a1747a66186e'),
-      (61, 0, 4, 45, 49, '0f2ddb6d75dd5025f2c4c1005c9f9f57d01c28c7460bf8bdf2259134f4f75485'),
-      (61, 3, 4, 45, 49, '7af2d71b0bed4a8ec4696571602c9a7f7c6a8a132231b438d27578d7fdd34fd9'),
-      (62, 0, 5, 46, 50, 'df338f2a5af61ebfd4f4503fc7344d47bfc50489ffcc420e1d2c2cc1f89ce176'),
-      (62, 3, 5, 46, 50, '13bfb9a0d83813ecddaef742c866be9b282b3a7ca2d7398c5e6bdb73bb3db1c2'),
-      (63, 0, 6, 47, 51, 'f1795665608928c5dc0370fa4368272944698124c31ef9bd21590d3f05dff2b9'),
-      (63, 3, 6, 47, 51, '317bfa4cee988774ebe5345a4bf1a26771a4ead1189ccada7f2a5a0f5df59f79'),
-      (64, 0, 7, 48, 20, '1b656362e04f237b9a9487281ba3bd6b8cb5fb262ac67da90dcdfa580bad8031'),
-      (64, 3, 7, 48, 20, '7fc29c59881d64efe530cf80f6aca0de1eb475892231013e2c9b3a1d70e84c23'),
-      (64, 6, 7, 48, 20, 'd3776c34fa3b7c0c5d27171794a916f876236ab71ef79cdf64c119bd83b5d4a5'),
-      (65, 0, 8, 49, 21, 'f9d69a970d8943f52a2d31de4291be81447cbb96a641c60125afc9f07e0797d1'),
-      (65, 3, 8, 49, 21, 'ae439da0e1cffc28168202cdac9ccc2edee90d303397c82a31f89f88b64d1a0c'),
-      (65, 6, 8, 49, 21, '148f659841aeb5a90e121371c137cc09c277b180abf18674529b935c1c35c4d9'),
-      (66, 0, 3, 50, 22, '58716471ba25df8f3cdce265affeaace58387218acbeeaaf7165add3dfdc1bc8'),
-      (67, 0, 4, 51, 23, '66ff7dbb02d4417ff6beb58276cd36bbdffc27f557b155f6b4d3c454103a35da'),
-      (67, 3, 4, 51, 23, '4e029de56c6d8967c8cacf18094bd2d8011fa480a008984e8685818cd914099a'),
-      (68, 0, 5, 52, 24, '5807db611e665d6a28f09e0a3c00b781cdde0ff30a3c49fe312a59246682826c'),
-      (68, 3, 5, 52, 24, '97eb39a179570da45f3b84144342432fc899da03a1d10f037e2ff0cf6b0b6bbf'),
-      (69, 0, 6, 53, 25, 'a246880c5a7111b02032c5af8e44b3b5e74fdf8269e2721ab68892f19b02d28d'),
-      (69, 3, 6, 53, 25, 'b08f76ac073a0ffad19c7889fdb79d55dac32fad1e5429678778c489eb92540c'),
-      (70, 0, 7, 54, 26, 'f1223cfc4503d6036af53dadbe1c5fb44c0649346d38c67a0ba9b4bbdc3c48fa'),
-      (70, 3, 7, 54, 26, '84a11692f9e5fcdc086dcbf2fb3c35f41b90aa2c0647c855a315e102b34e1353'),
-      (70, 6, 7, 54, 26, '60b292eadc9ce1bd6afc5bacfccf8050d3028c4f77ccc7aadff1cde2d31a25b6'),
-      (71, 0, 8, 55, 27, 'aad8340bb61932cdeecf69307100b220745ee476c942bd3ab235de773bbacba1'),
-      (71, 3, 8, 55, 27, 'd523ed244fc0334e5fc57e94c31c39d1b6838ea8b920a1b77ce2e518cc270950'),
-      (71, 6, 8, 55, 27, 'bfcefae624dcfe19339ed453ac6f41fe32d2a09774658c776b3a705009d234de'),
-      (72, 0, 3, 56, 28, '2445bc455130f0c84a9cc35292c293b5c9c8a1711ca53352d741e9e61f4e727d'),
-      (73, 0, 4, 57, 29, '3022e40d3afa4c606c1d5490e16bc6450ad0a5fe4ac3618ba45bb2a6a676f2b5'),
-      (73, 3, 4, 57, 29, '3e4e32efe6e83b595a7c6fd337e997bbd5f5c41e838ae1f0218d84fab14e7a2f'),
-      (74, 0, 5, 58, 30, '6eb6dae0eb7c1a063e80a3d173e13c8db868feef560cafe1a529d37584e96f5f'),
-      (74, 3, 5, 58, 30, '1283c4b4e205ee853d3288dae9b296ed3cc33993497ed69fee38f24fcbb61c64'),
-      (75, 0, 6, 59, 31, '2b02e1d701a37ad64e0d2e1838e243544f62cc3a67afdfb3a282e4ddee035ffa'),
-      (75, 3, 6, 59, 31, 'b231d47088bea1bd8274c305ccaf69c2a84b8cde0dfbfc3073567bfe8bd418e1'),
-      (76, 0, 7, 60, 32, '3baf300d40e467cda35da567be5a153c98be2528792d61878a3d75810d293367'),
-      (76, 3, 7, 60, 32, 'aea02eda11278b4dac02043e3fd8eb323c8b4decaa9dd70423535c892cab0cc9'),
-      (76, 6, 7, 60, 32, 'c3802caa9a57d889a0ff1d2caee7a845e6345b7424fb847e68c107e1346c97ec'),
-      (77, 0, 8, 61, 33, '4e623d69c6e383abcfe478756ca6152679f8e2863c1bed36855f33e929fb038b'),
-      (77, 3, 8, 61, 33, '3929b21f3400a5252d177c40c81fdad442e5ac2bb2339dcc42faefc970740f33'),
-      (77, 6, 8, 61, 33, 'ab7f2f5830c65511e10b561d4f07cea55361012b8044ad206e8a17073b52dac2'),
-      (78, 0, 3, 62, 34, '153f034b9bc9249ee7278900395e38d335539fab70091f0cf5b773570564e0a3'),
-      (79, 0, 4, 63, 35, 'd0a2aa5fa3df4adca90fe61e454d812def74ee216e97b2319a17de8340af9fcc'),
-      (79, 3, 4, 63, 35, '3572f7323cc61287121da5dd9b359b72a3eb55a9e3fd4d2ffa5d0c71d44323a7'),
-      (80, 0, 5, 24, 36, 'a3c5f7f7f382cc97797b3f97e6d91deb90c373791254b5c8b42d8d17e74e0898'),
-      (80, 3, 5, 24, 36, 'b917cd4e1cd4c7e94fb4bf9d81e0314188b5690977decfc645e079e1e0d7cd8a'),
-      (81, 0, 6, 25, 37, '49775fe67e0c38c40d530c1b813f0cf0cc3865a4593ce6ed75780cee7b5e0b09'),
-      (81, 3, 6, 25, 37, 'dc30ff6cf6abda6f7c424f594a563cca23d4df06dd62bbf78f75b1f020e14eb2'),
-      (82, 0, 7, 26, 38, '69059cd182beb31c63ba9a7954fd1dfdc0c90415d50ec56b0beba3d81572a732'),
-      (82, 3, 7, 26, 38, '69f79a67f5a3b0988328395d15e7a6ed6e7a33689bcc02d8e1411f3d1599ed67'),
-      (82, 6, 7, 26, 38, '1133d6cb08cd4fc510746b9c9ccee18b84ec491f9fdd346d2222be2a2af2d6b0'),
-      (83, 0, 8, 27, 39, '719efd8f25a522dac5507811d8d498040e8353f4e487e73d9c6a7f8359a98641'),
-      (83, 3, 8, 27, 39, '92015524d2ef3ddc22e5a71b05792aea5cab79fcda356910859f6f97749c5b20'),
-      (83, 6, 8, 27, 39, 'ee2b3cc7bb21cf5f0f93b70ec123ae0cf19ab3a0d7f7e29a4f388bddfbd73b74'),
-      (84, 0, 3, 28, 40, '1c24855d760e862ba115ded6df11aacc21d975fa3f5cb37f39f57c9be7aeaeb1'),
-      (85, 0, 4, 29, 41, 'a541f4483d9265a4152ae4439eb1a5445ca55c400865a42094815072e27bec7f'),
-      (85, 3, 4, 29, 41, '1975541bcc14e0b3cb85563b0be918467702972498f43f4965363897c934b651'),
-      (86, 0, 5, 30, 42, 'c1d9b6e3a720bd3867773684e04722e37b21ec89761dfd644d34c39251520031'),
-      (86, 3, 5, 30, 42, 'f2b29fa44ace8a3158a668a90f809e62386ee2a60f8d0b06135019148f7e60eb'),
-      (87, 0, 6, 31, 43, '27da4a7cd2554e747616a71cb3c1f4827ebbf227edaa91a10aa7bcc425e5f872'),
-      (87, 3, 6, 31, 43, 'ee8e3e197304d6286327c99d1640982c6b88a82dea399a7e6b090870cf45c827'),
-      (88, 0, 7, 32, 44, '1311296ab9f451f6a520a00fae862fb4cdba3480282038ce97b5024d9302c6ca'),
-      (88, 3, 7, 32, 44, 'a1f81ff8443089b51ffdeddf48bd8dfef70938bd39cbb373363c2227c959dec1'),
-      (88, 6, 7, 32, 44, '5b6f576bb187b027460b404bfb14de1dfdb2bb436b4d63ec0e5634e7ff912db2'),
-      (89, 0, 8, 33, 45, 'ffa1d5878c7f551adbab0b5a243c0e328f0e99a6b55c8ac027296383aa42f4e9'),
-      (89, 3, 8, 33, 45, '28773377b3ab74b427ffb07f00c305780dabf0cc88acc609d77c151dd3bfedbc'),
-      (89, 6, 8, 33, 45, 'a4b0097d98fd1a0a33a572bca067d51cf62babc84590cf367080007af5692e59'),
-      (90, 0, 3, 34, 46, '9c1304a7db30c84a6ac3980d2593dd7e4df5362158134b1889d5a4fb2076a159'),
-      (91, 0, 4, 35, 47, 'f1e509c524012964884b23421a7bba713555ac32fd6d91fdce4632448a27c2ea'),
-      (91, 3, 4, 35, 47, '715b6a314d207fd8ac93ec456676848f1e9b2aa151561d2135f89e3c2bd17bf7'),
-      (92, 0, 5, 36, 48, 'd0444f34aee6137071ca5102309f8bab66e5456b7c3545a5739d0b578769279e'),
-      (92, 3, 5, 36, 48, '8f3de45c1fef0df396dac53841cc2beac0eb18cc604e14cdb9452ecbd0390a34'),
-      (93, 0, 6, 37, 49, 'd1483256967aa4eca9aa67266e3e734a071680a733b69451bd7e3089f348e8a4'),
-      (93, 3, 6, 37, 49, 'ab9e29259066ec1a492cbeae01de652124573450013f48a2c13c32be9b6960a6'),
-      (94, 0, 7, 38, 50, 'c20cb1408807f2f943b4e1c519702b387e15da1c71ff470ed7062af1a6d39c51'),
-      (94, 3, 7, 38, 50, '6a779278f1fee1dacaf571356146f1b16f8ce052ec55d9d8f00cd2a8177d7577'),
-      (94, 6, 7, 38, 50, '33e24d69338fd289522dd4bd157eb265b5b1829d3b6bfede3aba7dcd082fea0a'),
-      (95, 0, 8, 39, 51, '8e942e1e63258eee1041ce5357ae6034a027d128e57d8fe87527d9e397410b4a'),
-      (95, 3, 8, 39, 51, '35b0854ebc3153b652f605afbbad29a1793d90ae24ca417b87fb04836a081d34'),
-      (95, 6, 8, 39, 51, '4175af847fc3c2a1a618f81ebd6a4e8815dc6594e33a53dd44a1a0bba2eefa20'),
-      (96, 0, 3, 40, 20, 'aad55d05a4fc8989ddf3dbe7c4c020c4a038bc555838b9521b2ea4724ab44520'),
-      (97, 0, 4, 41, 21, '102033d5d4024894ed87989a00aeb41d978bb8e9e1a3db74543d107e2d1aad36'),
-      (97, 3, 4, 41, 21, '7767c006a50e58ffca1a747ed04b994c867a6d76c264be8eb25f3484fe383d6c'),
-      (98, 0, 5, 42, 22, 'e69b5f9b1b91cae97611173ffc72c2f2ddbdfe787a4377b558bc27e501ca513c'),
-      (98, 3, 5, 42, 22, '6fb8646745246e5450ddc8e7007a93a1d33ae5a14fd31cc5d6741757e2814e4e'),
-      (99, 0, 6, 43, 23, '9c6b8d443f736f5864ce2d37216cc0a23a610f8a3284fe5e3b8a9524f3ed5344'),
-      (99, 3, 6, 43, 23, '25dd254916e0c3ca9fa1a770ed7e39c938e41495c3421ea929ffb697b25b51c3'),
-      (100, 0, 7, 44, 24, 'dd471b7ca44d9851018309e22137f9af67c2b8c88b33e98b5052b366825f7142'),
-      (100, 3, 7, 44, 24, 'a2c7ccb023d48f0290960be7b480df05398eb59fc547186936af14e9652157c6'),
-      (100, 6, 7, 44, 24, '309c16df8a85f96048dd44433e8bd4e7960ffa0ccd0ef92b24d653be311d6621'),
-      (101, 0, 8, 45, 25, 'ba8284e7ee267f0a8c9089db435adaa745abc0514f8640dcf80571da516a1d5b'),
-      (101, 3, 8, 45, 25, '414c0970d3fcf91b527960be219573b980745d7961c3594590dc370bcb9599d6'),
-      (101, 6, 8, 45, 25, '8380c4671a2e519c2b1e006d00f94274e5dc52235c107e7d2c287b34808da8bf'),
-      (102, 0, 3, 46, 26, 'fc4ab5f1224e99d105728ea429291425e12e155798c6a805d49d06d1cb7910a0'),
-      (103, 0, 4, 47, 27, '39db9278845d82c714735201e0f423801200cb65e6ff8129439c09cb5581623e'),
-      (103, 3, 4, 47, 27, '8832527dc1ad4991de05f107fde54308d2c7b8fc7c647b9bafcc58ec24ce0bbe'),
-      (104, 0, 5, 48, 28, '9db1c33592a0b3ceb90c81599846877b73ed4b37094d0857a411912630255e08'),
-      (104, 3, 5, 48, 28, '4a869e13b22bef25e735c2f965b264b5350fc24ee220b759270b4bff68b75f29'),
-      (105, 0, 6, 49, 29, 'bd48c0eb9eea5a5a3fadf3b5a3ec7afc7159a13d244c3ab4b617693a63d0d6b4'),
-      (105, 3, 6, 49, 29, 'd219166d7f23a0304acfc09c41f042f2f42439c51b023a5d38b720397b05b868'),
-      (106, 0, 7, 50, 30, '42aef6b2f0704cc9a73f3c7ef31d4b3c8741715e2628773ef551db82fde22b30'),
-      (106, 3, 7, 50, 30, '78456389972c5f5782a7c0c7264c003689c0e6c8397c760d9cc17ca9c6eff6c5'),
-      (106, 6, 7, 50, 30, 'c358be20b9f057772a1fbc8e82167091a0e95390188e7a0e87a1a5dc80558b72'),
-      (107, 0, 8, 51, 31, '8747bd67ec1609e0bc3e20862e249be95db207507d7cfa906f43efc108ef2ff0'),
-      (107, 3, 8, 51, 31, 'de7d62cc1f2d0d7a2afab72567730fb30c99bc79ad7437c39592a654d4d643b3'),
-      (107, 6, 8, 51, 31, '6134080532853f9caef2680080f6cd3b86eef1ed8e090e49322a0cecb9c4786c'),
-      (108, 0, 3, 52, 32, '62a1731e9e92e3e5835329dc8eaef60aed5352b484be83141417a545a44baa57'),
-      (109, 0, 4, 53, 33, 'bed3389ad23bc5e5c78e071b9df31f47d6ddcef57409d308ffe0476818593e33'),
-      (109, 3, 4, 53, 33, '7eb371b31dc92cd1ce5687ebd01c509cabeb6e9633a2dfa7e073f1411e15e30b'),
-      (110, 0, 5, 54, 34, 'c1cefc980a6e0da91b769ecc698354032338abe329535df3c5921eee41f92a93'),
-      (110, 3, 5, 54, 34, '20ca64ee5d22e79d5b88276459834c10522befd345e3adf6ac3757e55b6358a5'),
-      (111, 0, 6, 55, 35, '99e448a557b046abe60500cdaa69272a3db25b9f5b03bc12a6e0c1e520e14bb6'),
-      (111, 3, 6, 55, 35, '83e5bd8770c71f45bab387a3ea3dbf9b59bd90fa8bb4450fe519a6b89f2d55eb'),
-      (112, 0, 7, 56, 36, '7534e82a8439cfda4450d46739f9d703e3be99e150078a9e864a5f99dc4f0e1a'),
-      (112, 3, 7, 56, 36, '5306fa70268b730fe1e4900a6fb1f4984944100fc11db08a60316e90c44c12a6'),
-      (112, 6, 7, 56, 36, 'fa8ea4ea6f86aa2c784ebfb7beb12b3bb7a7a66d2e20a2b90fe9a0732474e309'),
-      (113, 0, 8, 57, 37, 'e92f2bb19c9d862269b5336f4ea7865c39331e252e38fdc7772421ea38964571'),
-      (113, 3, 8, 57, 37, 'ea6a120371e13e716bf54cf555d2ec4f79043fe803199bf88a3ad5227e2f562b'),
-      (113, 6, 8, 57, 37, 'b03ddfb42ac494709cf82c0adff5e8c8ff11a165623906d9b515011d70d26a02'),
-      (114, 0, 3, 58, 38, '70b3e0ccd15d32db29c39106e91d09d5b261f53de84d15791ae992e63effa176'),
-      (115, 0, 4, 59, 39, '3c594f8c328d7d1175da5ae771f0224c615f0e39a54d6d09372fd17ff8a7aaea'),
-      (115, 3, 4, 59, 39, 'bb474e3ffe02763ff5d363f4e933c030e299593375419b0bb01191e53ef11397'),
-      (116, 0, 5, 60, 40, '10138db618f7503075915c9e535d6bf051e00b03c4fab5e27350d701df935de1'),
-      (116, 3, 5, 60, 40, '1ce4cf5cd66765ee17d0295f92d497725b550c8b81eee0bc158dae2b427c9f1b'),
-      (117, 0, 6, 61, 41, 'e7082913f0aba84436da44f6ab33711ad5c30dfe95ebad948bb0ab4284777a00'),
-      (117, 3, 6, 61, 41, '82862844d6f8e1c6851a2a8869c0e3f64f91ef5b01961dd72b64fe9edffb2e08'),
-      (118, 0, 7, 62, 42, '880b33b60dd625a8578fdec7f8907887599051694278c6b56be2956ca93065c3'),
-      (118, 3, 7, 62, 42, '0fdd1968e6696c19ab0ce86eacaa56776fbd0f941f4798024b84368ae19a339a'),
-      (118, 6, 7, 62, 42, '870d7784e4445fd4e703b661c81f4c8616b07d7ce069756c433e0cb9c311aca7'),
-      (119, 0, 8, 63, 43, '738b2c1839f8caff573a2b943cfc4c2055022dfffe2ca14b1e4bf1fc59713501'),
-      (119, 3, 8, 63, 43, '12a5f84edcaab2684fa3fcc2b0d1bf640d39ac6c2cd31fe4d5cef9a13c8677ca'),
-      (119, 6, 8, 63, 43, '8ed8a981b976975104127a9cd0a22002a4a2df9f581667e614760031ec4f770f'),
-      (120, 0, 3, 24, 44, '63ed01a03d8f6f2c7e0214ed30a839f2c8748058ecda9a8bd8fe3b0eeca283cd'),
-      (121, 0, 4, 25, 45, '08c1116c3e336d26c253d395b6bf50a705d9cf95df61b4a6ff31ba7f13ec3bd2'),
-      (121, 3, 4, 25, 45, 'd9c7bc9ae15c0c7c87643620ad1ff06fd6ff7608c08160a81eaa2f17b19832e9'),
-      (122, 0, 5, 26, 46, '82625ad4e03039605ca2c55d27297507e1591992962a6782f5a7c207f6862e78'),
-      (122, 3, 5, 26, 46, '9eef7d71f874bcf6b73dbe2fa2b9c50b01a302a7bdec049f69e63a13fc29aaa4'),
-      (123, 0, 6, 27, 47, 'ea4eaa71bfe75b63edeb4409eb779fdbcc1938ab9b8b13582e80e0d66bedfcdb'),
-      (123, 3, 6, 27, 47, '64844f4a0b05c415cee91e765677176015a2191e13626ef0c673754f5da08019'),
-      (124, 0, 7, 28, 48, 'ec884c1f16e51533b6cbf28cf2a53f5ef32802227eead68c35af0cc7bb9a2d3f'),
-      (124, 3, 7, 28, 48, '891c19d6bbae00bb3b9203d53d321567ce1052743cf3933939bfd7d47698bde8'),
-      (124, 6, 7, 28, 48, 'cf7536481456c3bbbca3d405e9f45f4f24f71838bf4f0550c0ecf07d189b80e7'),
-      (125, 0, 8, 29, 49, 'f0c452e2980047e84cefe5720acbb7b4628723124c401863858e9112124199db'),
-      (125, 3, 8, 29, 49, 'bf92c5331d23b581bc0b6294c05582a0f8a9d8f5fcf7784c7638664c51294a25'),
-      (125, 6, 8, 29, 49, 'c8bf969b1cfcfab2b1ccb9430866e1bb9a4e8a387dcf8562c236627242732f1b'),
-      (126, 0, 3, 30, 50, '6aac3e228e5c0a307184642e58a2ed892995770c6a94ac94c4504d5ff2bfc6a2'),
-      (127, 0, 4, 31, 51, 'e00e351be33c8ac39d58a954e06059c53ee124dc60f473d1a138ce45cee845dd'),
-      (127, 3, 4, 31, 51, '4b3d7c0f66efb42fde587645df8631a3d0e160c26a1c4ebe2010cfc7661a5357'),
-      (128, 0, 5, 32, 20, '5a55bd501fbacafb179a3d20b1c55f5e1f22745ee2a98314cf83bcd17dc144f9'),
-      (128, 3, 5, 32, 20, '4cc70acf998c3ba82cf6b8b91cb0fdd64e049eccb658997573a6249bb904788a'),
-      (129, 0, 6, 33, 21, 'df6e53920ab75df11a0f6416024c40077ecd326a5e9b96e37538c826e42a8ec0'),
-      (129, 3, 6, 33, 21, 'fbae5841fd7b8ff933a58d90ffa0102cd5db7b102d405569ce48229360360d45'),
-      (130, 0, 7, 34, 22, 'fc0185febaea983531365692c48eb2d79fe7628161aac93f092d3110ab961d55'),
-      (130, 3, 7, 34, 22, '42249030ada4a4a0511a340b412826daedc5571c98f7ed99ec12a491d9a6ce9e'),
-      (130, 6, 7, 34, 22, '329503d46ea4939a1371c1d885752b8ff34b2d9b9b7bab480890ae1dcc85a647'),
-      (131, 0, 8, 35, 23, 'b42c0ad49507cbca60f04a44e1f028f5a785ea51a37bb6b732fe67004d36706b'),
-      (131, 3, 8, 35, 23, 'f74fb8132ab8c27bd95c9b1a88118874c26715ec72b0292357a7a53a61e0155b'),
-      (131, 6, 8, 35, 23, '14159e53a9437ad2eca72170f172a97d2566d9983927157e9cce2854e5ac542a'),
-      (132, 0, 3, 36, 24, 'b471cf15884b7ba9ffa23e0ff8c022ecac467841d94cb0323ea78fe63011dd0d'),
-      (133, 0, 4, 37, 25, 'f2c17cd151a0a09428d3d6f460bdd5c42be72ba80d63b367ccf17d2c6ffcac68'),
-      (133, 3, 4, 37, 25, '7b35940b8d4265aef69c1397fa3df186381ee3bf28731296b989e097a463b283'),
-      (134, 0, 5, 38, 26, 'e730305970eb40218d30247eebb4ce8b62440fdd7b408b63eda002c4c08fe192'),
-      (134, 3, 5, 38, 26, '076f09df1605f9499cea03c70124cfb86bbdc8943396500a118ee3d407c47ec1'),
-      (135, 0, 6, 39, 27, 'de7dfee369a42c3aa36aec2b0e301a8e3f0ad0b9d068e4429a4bef5a3ac61acd'),
-      (135, 3, 6, 39, 27, '00efb86d732d510ae56e14e0234a9021d9fe760d921bdb82f5e418abccb29cd7'),
-      (136, 0, 7, 40, 28, '282b31b880b2365f117dec489874de0675eb9c1200762ff132bc1e10a2a89dbe'),
-      (136, 3, 7, 40, 28, '20b67913489c9dea16ce7e82fc8c719fda109e4fa1dff3c44344b3a48cba3a18'),
-      (136, 6, 7, 40, 28, 'cead9fa4242c009dbd057d82881c17f94d024fbc5a0ca70484d40a552c7b7c88'),
-      (137, 0, 8, 41, 29, 'c972ddca4e8b8fb477d6c2abf98d38a5b60f05599e7b0bdfe84823087d379b37'),
-      (137, 3, 8, 41, 29, 'f9bbc6509bc394047883d08156ab3d1936d1e37313ce3cb22e8ee0a72b9f3dbe'),
-      (137, 6, 8, 41, 29, '30d199a7c61decccec5f03b0f83fb3966395ab4c842c543e2389f981be171daa'),
-      (138, 0, 3, 42, 30, 'd39f5a82045a500c698a55085b4ebbeed78757e6422fff640b2365d731ca96f7'),
-      (139, 0, 4, 43, 31, '3b160e63c2c4205d44eae5fc90713b388ed81122f8c4609809c69999cdece727'),
-      (139, 3, 4, 43, 31, '2743cc13dc75dcde4072ed2783b8093a5d5a3bbb20fe0b9dd184435b9728b324'),
-      (140, 0, 5, 44, 32, '7b8802a8e4b98de60b926f863614d54db8e640aa04ab65984b38445116375af5'),
-      (140, 3, 5, 44, 32, 'd30d5e621e5a32e604d166b9eedbb3f45cf5afaa759c93f42ef70c3d56d211c7'),
-      (141, 0, 6, 45, 33, '01bb58fec72703113531e112284e87a1c496681b4af1a357fb7835bcc4071491'),
-      (141, 3, 6, 45, 33, '1d418f35d71d7503fe0692e91453bb211113939bad78c8b2af51df8a02d349a2'),
-      (142, 0, 7, 46, 34, '8a3b2905b6de3e58d139a28d8f3ea83c92f5b4fde46999c74eb7b1c21589be51'),
-      (142, 3, 7, 46, 34, '57d3776ed8fdb823bcc9da96af1233ef7121ef88dbca081b3b839f10f87354fa'),
-      (142, 6, 7, 46, 34, '8100e20308a598f1d806d339dede83ed751bf06569fc02bf910ce1c9389938b2'),
-      (143, 0, 8, 47, 35, '2c53207c24ec80f16c19b91d49a3609dbd6bca08e2e0233f05f907c6f238522c'),
-      (143, 3, 8, 47, 35, 'c3a093d342912d497070b26c4d0875e4343fea184e123cc5e6f65993cd37675c'),
-      (143, 6, 8, 47, 35, '96d2a0e76c2a09d6c15d0be054542b3da4ae39fc936a0d62fb84b4ecb9828ef5'),
-      (144, 0, 3, 48, 36, 'e45962d2815bbe6cd4607bafb1dce4a77b0550d2d860da4546f8e4aade6da29d'),
-      (145, 0, 4, 49, 37, '7a5bab9c1d2563d282ed60be90a00ec01026fe7f31c58157605b27290653f7b0'),
-      (145, 3, 4, 49, 37, '67cad62333880cbc4ebba8506684723c88a9605cf6069336a817f9bd4fcb189a'),
-      (146, 0, 5, 50, 38, 'ca732bd2a416f921e3bf5ad48ca30485903ac88e3deb09b21a60d2fa8adf194e'),
-      (146, 3, 5, 50, 38, '572f6e6a6601b98cd123ea96f55978b8cf1af51211af73d1c1ef853d5b824231'),
-      (147, 0, 6, 51, 39, 'da8f010bafd405d097aea6978f84cfaf91b5ffd8abc31bd116d14a34b8c82f7c'),
-      (147, 3, 6, 51, 39, 'eb69aef1bca5bd44a0cadd99f669aaf34be63b272999b663db62e53486d78c8a'),
-      (148, 0, 7, 52, 40, '358c43bb86f04c97304fd1efad4532d11c22d3291a50c5405642be87f14ac4ec'),
-      (148, 3, 7, 52, 40, '61caf421a0a95905785940e9bbcf8f05195db499d873d84facfae30ac0ff3581'),
-      (148, 6, 7, 52, 40, '693753d919cdaaf0dc44f8c28702368a5476929651ad89d00423157c6351bac5'),
-      (149, 0, 8, 53, 41, 'b42cf1f6fcb6327a61acc9d2533b9c0201afda6188add38be2bb47608d2aa609'),
-      (149, 3, 8, 53, 41, 'b56dcfe0541cc71b62c1704aafb106804509becaa430ead6765f3a75367efb89'),
-      (149, 6, 8, 53, 41, 'cb90cd3a40bea9286b564d2f4b3fff659d2ca8b45b02ee685868d37b3de1b864'),
-      (150, 0, 3, 54, 42, 'e4764fdfa04fcb3d0384850d74b98934c58d79e2d5c90e8f04473685053abb11'),
-      (151, 0, 4, 55, 43, '112d8f0dbaddfed9d5d710ec55cbff57d1f2563ee4309d67898499391e7a4470'),
-      (151, 3, 4, 55, 43, 'ed92dc1a395c6d8390dd0e9386978a51bbd862960c67ebaf050910855cfdefe9'),
-      (152, 0, 5, 56, 44, '0e86f3ba0a125fc439c3db1b2fad975608bb0803e59bb1159a6217e90cc18e06'),
-      (152, 3, 5, 56, 44, '7cbe4cde997a792b1f6af4d064d39aea4ef116c1a67de6edcb9d98760927cde3'),
-      (153, 0, 6, 57, 45, '38b8efc2eac5343d2feeb985a37e3a5a32668a341eba073dcd538e8abd96b22b'),
-      (153, 3, 6, 57, 45, 'b68da6711a8366c674ba5e3906cb8d5a3dd30e3994cc49792f2a778da84edd31'),
-      (154, 0, 7, 58, 46, '5b4dfba09a45a274c8b97b6e7c4c29e88e51819528b7f97983f07d9eee59d6a1'),
-      (154, 3, 7, 58, 46, 'fdc52a06043b36ac747bcb3d1a6bc2ef4f536e5f1e20408c20fc0b89ff90c81f'),
-      (154, 6, 7, 58, 46, '6fad94a1af0ce460ed225cafa8523670619f77804eaa0ce7cb39b309a6bbb9f7'),
-      (155, 0, 8, 59, 47, 'a1021c2feda1fa808bd4f8b1d1c63626505e0049eacc861e5e2373afdbaae528'),
-      (155, 3, 8, 59, 47, 'c7979406a4cd45f71340137514b76d6362009b427330db47dd8c5b107b5252c0'),
-      (155, 6, 8, 59, 47, '09ad45ddc0d5875bc931b0d947f96d9d042ce079ffb84ab81dad81f6c0fa6bc0'),
-      (156, 0, 3, 60, 48, 'f8d4de0309e2d5e6673fd1133ebabcaa44b5951432a36045502a1bf05a8313db'),
-      (157, 0, 4, 61, 49, 'e779f82ad05709d5fff9b1f690f2b57159ace8d3c32271d9fa15db252662bda4'),
-      (157, 3, 4, 61, 49, '1a3a3ff77589cdb6c42518c3e1ca042aaa6bd58617ee94c28bda527c2a7fd86e'),
-      (158, 0, 5, 62, 50, 'e70b0d6e4810b2bf7b4ab7c169cf5438df7c8ddf1c3c329719322cc5f9b9be75'),
-      (158, 3, 5, 62, 50, 'd2a5ad79e1bd1f0544396aaafe1be1f05fcc46bc402a8feb1afc509e13bdad36'),
-      (159, 0, 6, 63, 51, '0a567b0591931410ee009634644c39b80d9a60303d11c7a4114989660085abeb'),
-      (159, 3, 6, 63, 51, '7b005d54dce7a5ce805a9fe96688d920804218053f4e3c56d31e86106f49cf16'),
-      (160, 0, 7, 24, 20, '3f29217ae36b7bc9d8a7d65a08f6b18ea848b1d34c9539bdba7b75643691f8de'),
-      (160, 3, 7, 24, 20, 'b0dfc33b6c45aa16b99e11b01e5a5725eae54d105ed44ed8e3e3b92bf7b10e49'),
-      (160, 6, 7, 24, 20, '020e4b4f1e759f1032db4a189b642b1acd7948a70f4c3257fce8395b1bf611d2'),
-      (161, 0, 8, 25, 21, '30aa87a5a8fb4da8d340e627699d0006df997283a6595d9c3dc52dd3de89a7f1'),
-      (161, 3, 8, 25, 21, '5894705303427225f8251a6ae52eedac9351759ec0b58606a83ae12153bfe6c5'),
-      (161, 6, 8, 25, 21, 'e768ef309ba23273d0cedebfb4bf2441fdc4cdfbdfcf5694d31173177509b9e7'),
-      (162, 0, 3, 26, 22, '5d449f98676c0dffbf870252eec32fbb01bbef469af8aee4f8b1033aa30b3bed'),
-      (163, 0, 4, 27, 23, 'dd13cc19d37e73768abd908c96bcc50b0bbec8ef2784372780abf98c75ffe777'),
-      (163, 3, 4, 27, 23, 'aade6935f885df1d1a253a346a13c6f38c9c5b06918cc883e3d47f8f5fcc853c'),
-      (164, 0, 5, 28, 24, 'dc483e294b96e23901b5ec015146638542c3c22f7e61de157d2cded50be66ee7'),
-      (164, 3, 5, 28, 24, '5e9d388dfb1b7a63796fe36dd35dbd86bf836796e97572a90ff788c908826506'),
-      (165, 0, 6, 29, 25, 'd1f4b2ff27fa084da96b770f9a0c6d8aa0dd5465bf04fb55de11cf675689134d'),
-      (165, 3, 6, 29, 25, 'db929ce57ca6dcf280dd57b7185e82d7b4f5de8cc99d83f9eaebee76746b196b'),
-      (166, 0, 7, 30, 26, '210d785f9018815c141ad98ed6c11a3397068c65cb9f1e3d0032908f29c0d9c2'),
-      (166, 3, 7, 30, 26, '0a8434daf0b02206a61974209d1af930d74e65346443f14470cb6b53655a6c72'),
-      (166, 6, 7, 30, 26, '130b473660def079ebe1e50f76073c916d4c02a44a47cd43f6bbcb814e5e762b'),
-      (167, 0, 8, 31, 27, '04d8a92d8e058d674fe891544a695c98f537668474b8a8658401dcd29bacd877'),
-      (167, 3, 8, 31, 27, '5dad82f9781ff46af2e33adbb6a80f1a9f92ccd68042e205c03155b30d6176a6'),
-      (167, 6, 8, 31, 27, '9a0d83c32eb3b2cb5bb616ae248bf9eabe5e7df2edebc6a389682e4b92254d69'),
-      (168, 0, 3, 32, 28, '04fcbf862391e7c653737e86ad35b3a8225f330e146686e2ea8c24ffec3c2cbf'),
-      (169, 0, 4, 33, 29, '9ab8908ee098ecc9290b659b566320bd480eeddeb7fb27b0c22d87568d80b28a'),
-      (169, 3, 4, 33, 29, 'ab43098e0c1952c3892e5ec480b0c3b6baf57bfbc67b6878b6e64db77f6b2498'),
-      (170, 0, 5, 34, 30, 'e9d517834235d351f6efb33ff99e1d724f70f365531982ecae00927be0f11e2e'),
-      (170, 3, 5, 34, 30, 'd8e29dfaf980fc2f64f533f8f61708a7048be15dcc10d5f80a7827ce54d6fcf6'),
-      (171, 0, 6, 35, 31, '3c9a486aade0be45361eb00a933f00f553fba02fbf0f688e0a59448f0d988d1e'),
-      (171, 3, 6, 35, 31, 'f5fea4490c08892892530bcdc48a047e49be4ef43b5e5ad6a68c09cb218b2607'),
-      (172, 0, 7, 36, 32, 'abbe4e7f675b4972c0f20a228276981068d6adf588d5502b95fbca8d5ec14661'),
-      (172, 3, 7, 36, 32, 'a2e606d8a91cc0cb813d86019887aaeddf159c7694b1b5109b2599cecf243198'),
-      (172, 6, 7, 36, 32, '8178f45698952cea49bb00b40d9f575b1086436451a990273f9a40eef5f7dd24'),
-      (173, 0, 8, 37, 33, '59097e01fc2714a0d7e0deed5e17fbc2e1c9ffb2c2e5d62c3f58f32fe7ea27c8'),
-      (173, 3, 8, 37, 33, '8e6f7693a084aa028100f9778c6f78c8e72ed4bc167c357491cf0c5bbe87d3f9'),
-      (173, 6, 8, 37, 33, '9d210203b075192531777a6a699d3563166a76fcad52822ff8f7eed9156b84d6'),
-      (174, 0, 3, 38, 34, 'd80a91b2d0f4b7735b10eb820d1adeae0f4921167651f60a483c6e3fe21f1133'),
-      (175, 0, 4, 39, 35, '1e774a8105bde9c360e923cb9a9369bd45361701b12092b1426e3e39965a0d0e'),
-      (175, 3, 4, 39, 35, '32bb839479a9222323655990c56b9fe6486d8ae4db565fc1bbf333ee93056225'),
-      (176, 0, 5, 40, 36, '247a0990ccf0c0bcda4a8639346afd91a51f9394c721be383ca8e85cc8990723'),
-      (176, 3, 5, 40, 36, 'd39d750ab288c8311989ff814f8cbe2a0f0c913008f2b8a5fbe12b500ab0bfbb'),
-      (177, 0, 6, 41, 37, 'a51bace1e65013ac3b4b18650d63e73475af4524a7905ed14a8e709671ef3fc2'),
-      (177, 3, 6, 41, 37, '27a0bbcd564699819ca50998cb41b990c37db9d2fcb2ea3fb8c3c54249902dfb'),
-      (178, 0, 7, 42, 38, '9e1184aa26c700511ac6aebaadfdef0e966eb4e970755140abfab8b730d25080'),
-      (178, 3, 7, 42, 38, 'dd692a965bc623031c3c9155a4510290ba26e819e2513e7286e443ef5cce03a7'),
-      (178, 6, 7, 42, 38, '93d4bb8a0e3588d06e232b00802bbbd838f0cc974d34ae33a6896d6f93466d9e'),
-      (179, 0, 8, 43, 39, 'c08acc5e986682b989ae5dbff411c05cb697952fc96966a83e5e6beb1c3ced3c'),
-      (179, 3, 8, 43, 39, '30670f0f3b3e033429a399eb5963a4dd9f0d1deec413641bf18fb82b0801b16e'),
-      (179, 6, 8, 43, 39, '045c40c2220d0ddcb036a9e5dbef31c3be0f5be8bf4ae307d18a90b227018ae7'),
-      (180, 0, 3, 44, 40, '461fbe9323cc64e95a0530ce8c9cd6107ca44afd617b147e8546573dd9aba9e4'),
-      (181, 0, 4, 45, 41, 'c59765a0bbb5790d0d8ade07176fc1ff886bb0306d4fae38ec92c5895da55321'),
-      (181, 3, 4, 45, 41, '7b4a57717d29f64f0f5aed46b6b49eb1811e1143a3d9896c71c94a63f661312c'),
-      (182, 0, 5, 46, 42, 'fda08819492fd99882b74d75480499b175fa25f2b03e1c4c7ce705d94f58483c'),
-      (182, 3, 5, 46, 42, '4da42c1deb6c759ed56f9fd7a094d52521e2f227cd8468ebe92766bb17e49554'),
-      (183, 0, 6, 47, 43, '2c41069758a4e57cceafc68c7fa18f1987983723af41211dbc3fa41231c21819'),
-      (183, 3, 6, 47, 43, 'b7cd8979db65eca18c6d20d8ba24d6e7a7032ed7f2c0e443694ea4a2f5f0fab7'),
-      (184, 0, 7, 48, 44, '1a1c430abe66f2032de5100261496c9be773f340d60f93c55921d6b900169037'),
-      (184, 3, 7, 48, 44, '4d26378b14c69eef407abdaee661b44efb714fca9f2606067b0a9ec2d3f722d6'),
-      (184, 6, 7, 48, 44, 'd600a93d666e20ca2bdeb5d47651d0db80aba9602471e7502555dc7fedccf1ce'),
-      (185, 0, 8, 49, 45, '84c298474a86d7cbc762557d2908735eeb61d4e0cd2b2ad2e98a70de29a06722'),
-      (185, 3, 8, 49, 45, 'd997bf4a5d185144587fa8096bce44883934080d31595ae6a7b91425320b038c'),
-      (185, 6, 8, 49, 45, '1a7f4676f34b59d7de20c5405b4b9c565707cc750adc2c71749ef0b9fcbf56e2'),
-      (186, 0, 3, 50, 46, 'efada1401648b26a8ca47e2bc45f5397b68698760b871eeebd7f906fad2b2bc0'),
-      (187, 0, 4, 51, 47, '7f698d1e39b4bc3b600824c4c3061c915f03e15b75900cd49ee5044c1a5b0b90'),
-      (187, 3, 4, 51, 47, 'd4fe286937b2b141b2c46f163e909c133ee3e1cac75a2d931b03f37593d816ec'),
-      (188, 0, 5, 52, 48, 'a85d058873f5c08bcf2168e7cfd021cb28c8ea0f0315205489efd8bbceceb13b'),
-      (188, 3, 5, 52, 48, '33c325acb43c769b515663d5954939dda63f12768ebae869a5a817dc809d435a'),
-      (189, 0, 6, 53, 49, '1d67f712a8c6b8c8d3df3ef93fc63749528a5a5126b05faa5a903f57fae4ba0a'),
-      (189, 3, 6, 53, 49, '1622129d1c0780e581f1d810ac8ff508b85b6ba26b4201b5e7ab1bd70f27f73c'),
-      (190, 0, 7, 54, 50, '3f5e293527e6ea73c9ee15d745948015c707257f25192fc12b0b1fc859737d11'),
-      (190, 3, 7, 54, 50, '798b8c210f6ac99260cf798a79b237aa254319116e7664700e4ae8c1331e3b3f'),
-      (190, 6, 7, 54, 50, 'e8ad8b68cf658fc4f3d40f536658a9c591ccd14ca59a9d27d511c73b21388176'),
-      (191, 0, 8, 55, 51, 'a9c05193b6603b505e0fc8f3437bd6771fa9bc9b64dfe84a44fcb245f0eec0fb'),
-      (191, 3, 8, 55, 51, '7704e0213116d71d1a67a1cede41c9689e5c1382eebf27e708d418f689f4e512'),
-      (191, 6, 8, 55, 51, 'bfcc64d6ce67d0493954e3732df78573f814b301373dfd0a5f0d789151ff185f'),
-      (192, 0, 3, 56, 20, 'b74d72c4de5504b2656865b961ca74a44790784091c50b844f0518517e831827'),
-      (193, 0, 4, 57, 21, '3d327b35dcd01ad81948e29107bc10c6a469e7b317363692274de137f30a5f21'),
-      (193, 3, 4, 57, 21, '2970d9f5e1d61e048f87221a4ced77100865e3772531b87d70f0142f41764c52'),
-      (194, 0, 5, 58, 22, '8e9ca3b4a6e6ebe661dbdba7e7cb32e0914f895766322018cd9900bf7273dcab'),
-      (194, 3, 5, 58, 22, '79d1ec1987eda8a37da2ce4d1cdf904634fa7fb0d7d3254b9459d31011e3007f'),
-      (195, 0, 6, 59, 23, '9611d91a5bd7f5de48d101452d6c0198b33587004f48e388c6588646bf36e85a'),
-      (195, 3, 6, 59, 23, '5aad4d7a1a9b47567713f7bb09dbbc00510f77b7bbf64e6bfb69ef428a89933b'),
-      (196, 0, 7, 60, 24, '98cb98743ca6517abb18c063e0581575c6b5db9d16a91fa1edaf80cd57f48e9b'),
-      (196, 3, 7, 60, 24, 'bebd655f7dda21d94ef60e6229a57f0b55dcc31faa052e5983fef3b3c9030385'),
-      (196, 6, 7, 60, 24, '8d0a46d01db84dc79c0e634bffca638ec84d5a5c4ee227d66ebbd916a0042f74'),
-      (197, 0, 8, 61, 25, '0266aa9a6eff3de735e76a1719c65f8d0c981217bceec07fd4513dfb3d2b4b20'),
-      (197, 3, 8, 61, 25, '340ebabe0d288305546c5690eb0626eac10e294c5e829a2ac7c3b07fe02c1e56'),
-      (197, 6, 8, 61, 25, 'eb0c96bfb9b7dc7ec5cab510fff9434835f765428db9dd978089e854a905ddff'),
-      (198, 0, 3, 62, 26, '461a5da507f20b27783338424117c77aa5ce4325e599dad469c7f450a0a12d92'),
-      (199, 0, 4, 63, 27, '12e3baa0b6409639bb6cb8211d0262d694337c62a3d9e531c178f35385299af0'),
-      (199, 3, 4, 63, 27, '07b1c63c712784e5bc0f22ab9a489c11b50328a3e8acaf88dfba57046fdf7fe9'),
-      (200, 0, 5, 24, 28, '32114c335d06563c9519edc1c3f09c5a65b5b9efafcd0c8e94bc905e02c7c886'),
-      (200, 3, 5, 24, 28, '1ddbc8c8676e4244b4f2f471a2ea6764ce676c4d5fcc717c3548be900d214eab'),
-      (201, 0, 6, 25, 29, '1e5dca01f86d14e1241c11d87b4b081cb50e113bce61910c886e9454af4aeba2'),
-      (201, 3, 6, 25, 29, '1df9911d4af2246fc658c31807ae7c506a4368de7c5126fb1ec246c5bea035ad'),
-      (202, 0, 7, 26, 30, '48492273118c5a3cec3b81b84df6511fdc643cd2c7f4f460d8afb9dd6166374e'),
-      (202, 3, 7, 26, 30, '90dbf34770aa50d2c9f735c7bbf74e6c77529c361b3ee42e84e7d5a5be1d3984'),
-      (202, 6, 7, 26, 30, '258daf106a622a6ddc0a5600ec2c99c785e642272ba6efdd40d6efe87839cbcc'),
-      (203, 0, 8, 27, 31, 'd39a9d64b508bf3847a48cafcf62482dcdb68e805db3800859bafa95279d1e08'),
-      (203, 3, 8, 27, 31, '3c7886f2bf77b51522a488fb68efb845ee10dcf5e3dc79ac6224294527815cdf'),
-      (203, 6, 8, 27, 31, '5c3c8ad4595a74ccf4d477beccdc6118756916d7110fe7244965be115122d59e'),
-      (204, 0, 3, 28, 32, '281eff1685ec74861c58f62b27bc2e9e9ef8ec82ac0be236724d79c7487a80c2'),
-      (205, 0, 4, 29, 33, 'de9b656e659db88002cb2d08c69a798f85b485dabd41ec4dc6fb273947c97c9a'),
-      (205, 3, 4, 29, 33, 'f62335c31f46e010abda7ad5c3bd4480e9dd319a89eebcf9f5e47c3e8ca9c557'),
-      (206, 0, 5, 30, 34, '86208fe06a760b076d84fd84e82b3542f3d95e411af30878c22311f151d1f157'),
-      (206, 3, 5, 30, 34, '9a038acd1623b21478229c42723948a73285c59d66b7a9973493f180a651a6a2'),
-      (207, 0, 6, 31, 35, '600947caf47af08cf8044ef589a6ac906a1a7a649eff41e3eb0358602bfae96a'),
-      (207, 3, 6, 31, 35, '6659b162a34cecdcc313104a2a56eec35f3cf36f4ca1f91856d185d0e68d5cf6'),
-      (208, 0, 7, 32, 36, 'fced69675d0c8e53875f70bb7db0268f296c0880472c5b5d0f4dcaea88b674f9'),
-      (208, 3, 7, 32, 36, 'cec68177d22a997d54ed3083f8b2d3342c10f581371533fd946fc7299b5f6db7'),
-      (208, 6, 7, 32, 36, 'b6d116bafbc2166508f9d1331f5a561cb8a60880d5d2b575bda279d3410f28dd'),
-      (209, 0, 8, 33, 37, 'e92412b5b74180e01fb902973f06dbecb6642046adf574e5febabc6f3bb09bc4'),
-      (209, 3, 8, 33, 37, '44a34535a88cbca093cbcc428f1a56ca373d3683eae6dcfe13c527dbd74f9079'),
-      (209, 6, 8, 33, 37, '97208e6330cb01691a7b69bed84a16c2f23fe637d635f1149abefbac98e2c7ab'),
-      (210, 0, 3, 34, 38, '3f6059fd003ac459d3311435ce94b8221642a01b67c7633914168b68f7ef2ed1'),
-      (211, 0, 4, 35, 39, '45c244da801c76533a745bed5064efbd9b895c3e00f546e839f38ce9e0ba9077'),
-      (211, 3, 4, 35, 39, '22322d6634444ed693db21b64e612102e2296fd0b0a604e000d40ea9e496024a'),
-      (212, 0, 5, 36, 40, '4de891534533f2f2af14e902eea828e19afdfef504ba6efdea831c444e8ff095'),
-      (212, 3, 5, 36, 40, '80c797aaaf0643465e93aa28abb1e990b5fc5dc3bacde874e28f6fc0ce5e3c1a'),
-      (213, 0, 6, 37, 41, '57636ee70447c57c4bb9f4b7d95827916659927e69fc92be4ac3e023bfeabb0f'),
-      (213, 3, 6, 37, 41, 'cf5be45519ddb34f5003167345e423519ee742c6cd354e8491ab6c4621f141d8'),
-      (214, 0, 7, 38, 42, '3d352e4eb7636d3e61a8f99762927c8e9cf5937ff341727e9f69788d3761866b'),
-      (214, 3, 7, 38, 42, '1c0bf08cf3d3290d9f52462bf1c934b1ae8efbf2e3b4f288c21a86d4d0de8060'),
-      (214, 6, 7, 38, 42, '0be64e13588d6278203c46e685fc15e79e55bb7277e6bd7999ebb3094c6b1988'),
-      (215, 0, 8, 39, 43, '9ed56e3d15a0f5acf0b8fd72979d9168885eec5833827f28cc6aecb293ad0563'),
-      (215, 3, 8, 39, 43, '1094c14bbace0252cc9384f82209f4c184994b99a722bd66585739126048007c'),
-      (215, 6, 8, 39, 43, '5a3d25c7002049eb5997a29ae3470de21635c3de67f72d30b7c79088aa017753'),
-      (216, 0, 3, 40, 44, '5e39b4e1fea451c8c6190bee6bb351a7e646586526ba2c09b42d0e3158e759bd'),
-      (217, 0, 4, 41, 45, '284ae7aee0154210f15de6dfa5131c383be97f04745cda4603e7782b96290952'),
-      (217, 3, 4, 41, 45, '0ab0f5dc4b0bb45ad220dfe371f1a0e00f5225a6ee4d56a7262380fc284ea02b'),
-      (218, 0, 5, 42, 46, '048de10969b9d5633defda606169e86a1c29ab047a0ee210712485dd1c46e3a9'),
-      (218, 3, 5, 42, 46, '2cf650f7bd89b56cf705a4dd185939d36b13ec1ced687e2e230ea11f2340790a'),
-      (219, 0, 6, 43, 47, '88efd6c5b7f855daf18b9c8cdee874b58713ea68c620e1198b80a26989781bed'),
-      (219, 3, 6, 43, 47, 'f06a6b17641108386b8202d6b93f7fa12e5f4df7a66c5f41f756fcdf4adca58a'),
-      (220, 0, 7, 44, 48, '12c4e838be4f95f005ddd88dff0409d961ce49414b0b66a3adb0853e286cb5ad'),
-      (220, 3, 7, 44, 48, '32faef97bb734d2e1ab8aaf89cd46db9451bad894fbb52e69e64fa21fe38e989'),
-      (220, 6, 7, 44, 48, '3c8023cafb8141596e07453d4be5b4f727f53df507342719f53c3a77b367fd9b'),
-      (221, 0, 8, 45, 49, 'cefd73059e88775db28bc84150fe726db6893faa208addce9a35b61dda6e20d2'),
-      (221, 3, 8, 45, 49, '6eadee3ac8bbdfa36a9eefa6f34104e9b42cce1ce8340f95943918a37dd5d86f'),
-      (221, 6, 8, 45, 49, '7676bce847a4a9db5ddc423614e77b1c50127f27f1afa6aa11bd59b2fced9334'),
-      (222, 0, 3, 46, 50, 'c83737bbccb5c85d22e34f92a0843faa7237ec79485696480c040a5e83b666be'),
-      (223, 0, 4, 47, 51, 'bd1e7370056ae7456c8b75fbdf8e2dd8830b622c567eeaf865621153ccb01b9f'),
-      (223, 3, 4, 47, 51, 'aebd5c88ce3cf051d4f757c5d2d021574ac9e101e6374f269b5c4f1486d51e99'),
-      (224, 0, 5, 48, 20, '9fbfc1f63d13d79e496e20890bcd929e6ba6632afdc6565e7b163625d1a28820'),
-      (224, 3, 5, 48, 20, '14e3c3391e0e08111a9e2973be7a8eac82ed95ac385455e33afea969c4f6c94b'),
-      (225, 0, 6, 49, 21, '9f9d0c10b31a6eb5f434794f33bd3f464af2f6792f22378a1eaa65dd4b2e7d97'),
-      (225, 3, 6, 49, 21, '6967a81d589c7acea55b40a20581584018007ba8100e636f1c7f489561590074'),
-      (226, 0, 7, 50, 22, '09b5eb4bf657ba904778b0bd1a77dccd5e3e5cb5c21ab6dff3c10623c641ee83'),
-      (226, 3, 7, 50, 22, 'ec0aeaf93f0dab0f841c2e923ee4aa6373061b720faf943e92233b28db38a9ab'),
-      (226, 6, 7, 50, 22, 'c9f94111c67b1962d7f3780613683b192ae57fff53c5b6ea5f51ba1d2d78e876'),
-      (227, 0, 8, 51, 23, 'adfb557e2e175098ed4001752038a719f8dfbc03fed5b08569bd89ba895ee3ce'),
-      (227, 3, 8, 51, 23, '2f6309e0c514bf1f64884ab12d3ef6bd70d2b6380d935d3b5a33401ba2cf13b4'),
-      (227, 6, 8, 51, 23, '594ef6f4d61c638408afd558e03cadae7ec06120562dbc3969f03d0f59e76064'),
-      (228, 0, 3, 52, 24, 'c8588a1dcb84326ff3b9404a860d5ff0947a41b5bdb2279da6a8027cfc9951ea'),
-      (229, 0, 4, 53, 25, 'b882618fb5030f9f024f7043eb65fa83348569a3c2791fa8c7abe2c893fa2462'),
-      (229, 3, 4, 53, 25, '726908d4c8edc0a7a8b01d461c28ce9ee0178458e941d2940fa119d412934a16'),
-      (230, 0, 5, 54, 26, '7fdfe86a3ed720c9f2b083f58fb47b1d845b566e68a728e31faefdce212ef9d2'),
-      (230, 3, 5, 54, 26, '39a6b1ec5aceeb384afb928d33cbb6c40e768c48a74a457258d8e5c5f35a6135'),
-      (231, 0, 6, 55, 27, 'bae8a93de133b8c63f1dd0384cbc35b91d7906af5822f722bfc4ef9cdd098d9e'),
-      (231, 3, 6, 55, 27, 'ade04a752e643c8b509e173cce8d3921f867371273ba36395e8d2bb4408462d2'),
-      (232, 0, 7, 56, 28, '4b02e531c79a4661790db1fe92bbaae955cc1bc443bde5b94860f7ac120a783d'),
-      (232, 3, 7, 56, 28, 'dc1cf1d5cc37b211d979554581967d1133949a7917ff341a835ef06c76d4676a'),
-      (232, 6, 7, 56, 28, '6daf172652e418827f67997709298d7a6801898ff7d1d15963ef12888f93217a'),
-      (233, 0, 8, 57, 29, 'f5de14eb9fa9e184d8dcfbfb12012d48a385dbe6ab81548439d3c758163d85f8'),
-      (233, 3, 8, 57, 29, 'c073af1dfa5dad50fe384e619f290e68e12aa3e8b65ddb2c537e9e09313e7f17'),
-      (233, 6, 8, 57, 29, 'bb8242a38a2f7cd6d02689165a23736d98622d883f1b3fbb791e9009f3948dc3'),
-      (234, 0, 3, 58, 30, '2a4b6267ca151dd599b84bba51b8271f6baab69458ccbd31a4a18f624a5d285c'),
-      (235, 0, 4, 59, 31, '3c23ead44db8140c9aa7ab59e013701c8eab79bda12b95da52c62332f466fa6d'),
-      (235, 3, 4, 59, 31, '2d321d0c41f32bfe666250fd6f31009a481c2cb7f948aee344b22ae07beb3def'),
-      (236, 0, 5, 60, 32, 'de8a9984ad5b2a5b91a731803b46b4a033abc5f66627e71ff58db973e164aef2'),
-      (236, 3, 5, 60, 32, '01fc79845ae071fd68df0c5707cc51911924445b5f712279fed9d6442fef2fd2'),
-      (237, 0, 6, 61, 33, '72173e0bb67320d6fe3c1f9d673d9bda3b1d0da9c5f265fe831c2b099f12051f'),
-      (237, 3, 6, 61, 33, 'd68aa2752d58110e66788989c1bef8ac272d3b0559b9b343ada66638b1ffcf28'),
-      (238, 0, 7, 62, 34, '0a2ebc439cf5f227bfcd37f0d313e31830423b43c870a1fb94a0c416dcbda372'),
-      (238, 3, 7, 62, 34, 'd35dc7363b36097b635bbf52d6e0b039f5e5c8108168cb1bf64ad5a67f17bdf7'),
-      (238, 6, 7, 62, 34, '8e29986e2e7f99ec57e61ae611f32bc65d1899c0987e5d06607a8161ce9736cf'),
-      (239, 0, 8, 63, 35, 'df292dfd653277a79265886f4ccc1b8c9bd881d35ab4a416fc518b4194dddbb0'),
-      (239, 3, 8, 63, 35, 'abe6f30a07fe8aa8f2b899b087df70955e9d4bd5daa5dd0f4851e63fc19bbb15'),
-      (239, 6, 8, 63, 35, 'f12f08f9e6ae2eede6d29ceef77f6f1a449a816774ac07d8226aa3c2b582a98c'),
-      (240, 0, 3, 24, 36, '07468cf940858c209113e504ad6c4f30ec222a4a02667b77129bec1b05203da3'),
-      (241, 0, 4, 25, 37, 'e17e599dee3c9e1d9b235a5f86c52232e8367570b24370de5bd7ad3010ea5135'),
-      (241, 3, 4, 25, 37, '653a52b51518a8be40d3aa7eb669c4ca5ca9663339007911f6a892d894348869'),
-      (242, 0, 5, 26, 38, '6a6e2059b96239e6e7e56e7e93d2a512385ff5f34c19715b6872a5686bce43bd'),
-      (242, 3, 5, 26, 38, 'd36ef024c2e44c8c133f71afced24e1883cc941eec45a6cbdeed79e1a565a3d5'),
-      (243, 0, 6, 27, 39, '4e6a43ca766d12738e96a2ff36d3c85953d7c5713678df8604e68a6a9c692149'),
-      (243, 3, 6, 27, 39, '76f5394ee4e99a937d36d7c18978e5cd8d93ae486bba8128efa1c7b7d06c3ca1'),
-      (244, 0, 7, 28, 40, '5599b6f8cf2c06e7062d078f2960a0dc8d4027556f370e20baabc7e00137657c'),
-      (244, 3, 7, 28, 40, '4a8745a5968946e6507b821750b633d22b8bcafebb6f27dae9340f585e50f55d'),
-      (244, 6, 7, 28, 40, '899d5d62091084006c2c0e5627c2d08c578d13465bc8b7be5f1f4e548349df49'),
-      (245, 0, 8, 29, 41, 'b8c99a229618c486d694e4a8c900d0a0b949fb864bb4533421d643377e409338'),
-      (245, 3, 8, 29, 41, '7b8fb29fc28d4a0340e180d4f74dda33f948061fd1c67a2b9babbaf4d7135e7d'),
-      (245, 6, 8, 29, 41, 'b97d4fbe665b8834a7f9546585e7092311f30ee8313d3f9ed2427282f91be64f'),
-      (246, 0, 3, 30, 42, '2777cdf2b8a6da2933bd3ba6f5dc36203aec1b64780aadac549c796c925f6737'),
-      (247, 0, 4, 31, 43, '9cfd2e0cebf61530c3cfd275398a66fdf01026ef5bf579a384b390109c13dd19'),
-      (247, 3, 4, 31, 43, '436a223d36b3f98b310a6a16d9957dcb5e862eae5c582e6744b9a19b1c4ee7da'),
-      (248, 0, 5, 32, 44, '48563d18201d338e803d54d2eb4b52673076d2b2ea328dd492dce10253030ec4'),
-      (248, 3, 5, 32, 44, '6302a884f4a39dc9af49880e72d55d2691869d973eeb3e6b57df77e920db6b31'),
-      (249, 0, 6, 33, 45, '9d4769c94c7bd2bc1e94eebe3646262baa744bab11766667ff5ab81044342d5e'),
-      (249, 3, 6, 33, 45, 'b2e2213639a7c5a1be4d578cf636610d3401dc990b5c69a28bef7d770fb82b43'),
-      (250, 0, 7, 34, 46, '8cae8f3aadffa0b5442167cfaae0f1cc6fa11989c4f95029d421b420d9bea76d'),
-      (250, 3, 7, 34, 46, '4c4d1fba73cf9500e29290503d8ec2aacdb2db5fe6ff66c6f2e750d0e7fb9283'),
-      (250, 6, 7, 34, 46, 'f46515a619e68adfb041716a5f951a9116e11046d140846cf7fa2b4804d57e92'),
-      (251, 0, 8, 35, 47, '259f2645a665b1eb661403c79d27256d26282199e7e2f4e0a13da0e304ef8f7f'),
-      (251, 3, 8, 35, 47, '4d7ca7161dd2c1e61e9a689cf23b8079e438584c4014cfe92a3b7279dbe32e7b'),
-      (251, 6, 8, 35, 47, '0d36d3f0b56123315b5e7ac4899e74ac1f0ba6abe3c0597ba3dcac9094f4b411'),
-      (252, 0, 3, 36, 48, 'faba4a360f6a9ca285fc6d2a096a4a4665168b7d652eb84448eabf1a5264552a'),
-      (253, 0, 4, 37, 49, '938740d901efd2582d8c000063e248fcafe352fd2edbd9467586e393a3619a54'),
-      (253, 3, 4, 37, 49, '89895d246eba2005e9aec634e930936b39be4ce4a9db2427a1368bcda8214992'),
-      (254, 0, 5, 38, 50, '7e93af5e66ec205c5e07d6dc6dcea015373f0d41626c0cfddc6764fa393376cb'),
-      (254, 3, 5, 38, 50, 'e234427cb82152dc8731a885e196794cf927b2e23e0a4884b1be9e18e1559dfe'),
-      (255, 0, 6, 39, 51, '4028f1499fb753a2a25e6db7523b37f6cbd91ea93d2c13831bdec806a8492c85'),
-      (255, 3, 6, 39, 51, '43d79fecb3983faf302a762f1b0a214e3934a112f3aa57a9689c9af68fbae0e2'),
-      (256, 0, 7, 40, 20, '9b3b7e116cafa60a950c2e330d6a6e5f24502340c245bce443ae71ac1a8f4d4b'),
-      (256, 3, 7, 40, 20, 'dd050da989469a5e49472ddb5ae378e4b3195c5d9fc017ba2608d899553f2173'),
-      (256, 6, 7, 40, 20, '961c5ee38fa580aa01e736004dc42c73ebaab66865cdfa2b7360429a13e78209'),
-      (257, 0, 8, 41, 21, '69be377bde04064fee20489ec84c06a4f7dbe7e5fc9caca1ca3144f59ce6f903'),
-      (257, 3, 8, 41, 21, 'e0a6288af961915f68da44c776ce2364fcc49acbf99a83ea00ee75bb4765cf35'),
-      (257, 6, 8, 41, 21, '62c343f7295bbec7df431e8f660461b155892c14f218a8a7bea0b344bda60628'),
-      (258, 0, 3, 42, 22, 'caceb131dd764bcc290d7ebd79a0da8b41bdb49f1f6a0b7228b54960d27265c8'),
-      (259, 0, 4, 43, 23, '33b954cce673ec35aab297b8715d70b0b94974053eeb9dd9bed45e1d5a7341b0'),
-      (259, 3, 4, 43, 23, 'cb0a181b82bc532e7c2cb7c68b4b4a380be0fc622e36afa53b88bc49340350c5'),
-      (260, 0, 5, 44, 24, '3568124ac1d4542973f010bf4995d969b917a3f85765618768c49183aa79ef3b'),
-      (260, 3, 5, 44, 24, '9ac991f0efb37610c3dbd5ce8f4a587df7338c69894c88c0e5caae0a11ddfa83'),
-      (261, 0, 6, 45, 25, 'e3e2c3ead906fc1a59722edc6140a434d91c31ce70a82d429dd3433e3981d2de'),
-      (261, 3, 6, 45, 25, '6e84a7188299a88ef9e9b5b986d6a81028e3b9e644748a32c9ce59e7c8a7ea49'),
-      (262, 0, 7, 46, 26, '516a187a9e5c54e0f866a73db97de541ec76e2158e2bf887fac8c0b2772a3d74'),
-      (262, 3, 7, 46, 26, 'cf0bd4ae3b0ca9930742c9a798bf5531164cd42b90e8eca5712908913a19787e'),
-      (262, 6, 7, 46, 26, '94a55c312639cf2ebf73dace2f8caacb32112b5d86b5a4a0e174e7bd5da3b909'),
-      (263, 0, 8, 47, 27, '8757f6e1a90ea737e67ec60f5236e0afd892c8b660bef596ef82c5cbb7191e51'),
-      (263, 3, 8, 47, 27, '3314309562c17af189cca01ac3be1911295a5fef3819c92e347d2298e2bf4dec'),
-      (263, 6, 8, 47, 27, 'c8502b507263d5292fc9eb50517c36d0bba95c92f7587c30bcb2a9fdfb53ba6b'),
-      (264, 0, 3, 48, 28, '8b7502a2734a84c0ebf632baf808fd0f0746059d14c8231c8274712a2c8df685'),
-      (265, 0, 4, 49, 29, '8bc7c701557262fab0c7480d14740780f44cf340820c8202849a96176768c9b0'),
-      (265, 3, 4, 49, 29, 'c8cc40c6742ded8b87cb9f3127e8c653ceae1071ee0a49acc29bb71e1a51a5aa'),
-      (266, 0, 5, 50, 30, '9bbc3b61b0fc76966739a20141d1ad84ae421b50f32568af491edcf8941afd44'),
-      (266, 3, 5, 50, 30, '5bcdbe65c8bb0a1ff388d9b9831f6a679ea959cd31dd691f37a30e37d0c512f2'),
-      (267, 0, 6, 51, 31, 'd15fb9da98ecfde8118003ad88acd2943b77784238260052382dfb5a3d99136c'),
-      (267, 3, 6, 51, 31, '7c11f1ede59219499dc65ecedf585fcf4753c000e5a32a0bf53f874ba7eb8063'),
-      (268, 0, 7, 52, 32, 'b157ca82946469bffb1d5bbaa26b5e820fc117352e02d7ea46d9a2d2dec1354b'),
-      (268, 3, 7, 52, 32, '571f28a787b95cd3771a7195464efccf95d87efd276f6505c719f9ca3d5982a0'),
-      (268, 6, 7, 52, 32, '265495200aa3cbf580dcca3e39d5304c45b050e3bfaf44224a5e404d00910b99'),
-      (269, 0, 8, 53, 33, '5776fe2266199b945050968fb7b23a4878a2167effdb7aee45e6621d2fb436bf'),
-      (269, 3, 8, 53, 33, 'ba4d66168a38ad56afa9bccf98998fcbcd8800471a8d2a751a109f48151cf83c'),
-      (269, 6, 8, 53, 33, '7a02dc56a5d8db0e7738ea950f529c3036e39aa6a1688a0c2c05c30974ed1416'),
-      (270, 0, 3, 54, 34, 'a23ad3da4ffde09b4e4d01705d045f0cd6404b02b12a6ad0dc2c561e59e084e9'),
-      (271, 0, 4, 55, 35, 'fb5c88f84eeb2165c9ecfb9aaa6611d82120180fcb781cc32a326ddcf8d57cf3'),
-      (271, 3, 4, 55, 35, '96030d12476d31d84ab7ccc1fb4ce0da82a94ae55e048c6c3e238b0d498d04d4'),
-      (272, 0, 5, 56, 36, 'ef654ceef4c97eb588f545353ffd245488bef997a8a461d1230babf707af592a'),
-      (272, 3, 5, 56, 36, '5eb38a61ccc031ef406fc629be2e21ff1f48053afc4eb13cbe15797a98ee33d0'),
-      (273, 0, 6, 57, 37, '6f40340bf53043fe12968daac3576ef4cea23dcbfbe2f20f5ae4395326826763'),
-      (273, 3, 6, 57, 37, 'abf330407d2b2438e52215fa60cbf8b53ec2ba95e8f3d46818a230eceafdb570'),
-      (274, 0, 7, 58, 38, '8ac1ad0406058f5e9ee2e2bc8eb3e93a4a94b8ab26fee9746189a8b6171af729'),
-      (274, 3, 7, 58, 38, '2516a1e43452ec28511f92c7d1daf53a9339fcde2b2e93b66d2200f2c185e3b2'),
-      (274, 6, 7, 58, 38, '20a2452f769e8bfa532d62868a5bd4a1ece232c3d7a71647d840006e956e0b2f'),
-      (275, 0, 8, 59, 39, 'd5cde8ffc8d7a84045de17f082e590e98f7fab2675523574709427b02ac94b7c'),
-      (275, 3, 8, 59, 39, '0711bb40f813994abba7899b6dbf44674c7f719999904317d32bb6468719d9d0'),
-      (275, 6, 8, 59, 39, 'b3ac9fbb83d99a0b79ac01dac424e9a2e2cfcdf1e29e77b12f77d8999082ab26'),
-      (276, 0, 3, 60, 40, '6737e7277afe159d68aae59f7cb890b72267681fec16303fd8877cf2e9e59deb'),
-      (277, 0, 4, 61, 41, '88ced71565c0a966ad2875d8b95c2ef052a2b59c27c96bb8932f9de239d970ba'),
-      (277, 3, 4, 61, 41, '1cfbe6e8790266dedaa274604ea6b468a4c1a429006224719d01ba1e1dee0725'),
-      (278, 0, 5, 62, 42, '27ed6c74c7c6c21419b63d9849ddd8b0574f112f910b15a4e6ecdf7801550b99'),
-      (278, 3, 5, 62, 42, '00e03dcd6efbd1d3644ff21f7487be0c48ca7de654d0d6e34da82c300131f000'),
-      (279, 0, 6, 63, 43, '849a6ebf786690edb07ca293db36c6a03c69df25d9b596a238a116b6ab852495'),
-      (279, 3, 6, 63, 43, 'b09fd5ff0eef1c3947a4f4d93bd60e686f9ca9d633796093083726d1e2152a70'),
-      (280, 0, 7, 24, 44, '1a42cc362a11f507377ce82c5c0f1489ec00fc27833530d86ee1ee93f12b47b3'),
-      (280, 3, 7, 24, 44, '03fa51f6738e4dcab30717a31fd84205303c86d01642416ddf4a6759e18ae110'),
-      (280, 6, 7, 24, 44, '9ce2fc5642072c234def9cc832876b19c1bc80d25d7194bcd5f519e74064b9bf'),
-      (281, 0, 8, 25, 45, '9748da385b502e10336a849eecfe2adcc90714d75142fa5027bd5bdccb9b4237'),
-      (281, 3, 8, 25, 45, '88b11fd227a91666433cbfb3035c3588d0dbfe46f6aa30d7f17430d966826864'),
-      (281, 6, 8, 25, 45, 'f1bc772ac6b1e59566e57ed09db59d90633039c150dcf4b8ec909e7f1344610b'),
-      (282, 0, 3, 26, 46, '965a06a1e7177880d8ba0ef3ae0968912e30f7db3081be5fb24e99abb0083cfd'),
-      (283, 0, 4, 27, 47, '08acd6aa8e808095f6b762c0f1e24c81743d7a9475860d77192adf09f869905e'),
-      (283, 3, 4, 27, 47, 'd66b90ea1a46cf38ed90bbc4281e66b6d35327335c84ef7cb6b02d5a6159f976'),
-      (284, 0, 5, 28, 48, 'f3a0e79318cbaca49db60e4ec7e6bb16df8c7d9e7b636b3bff30f8d51a4ce56a'),
-      (284, 3, 5, 28, 48, 'd446d8007933917014b7532a66e90be507bc0040650bfacdad69fa0953e6788e'),
-      (285, 0, 6, 29, 49, '3e54e07c80f7df5bb306bd2a1878772c9f249e63d70ab9f1fa1dc23aa48a7ba0'),
-      (285, 3, 6, 29, 49, 'bcccc73626d0bb95fedfece4797a632685b2fb31eef77e20f8cc575930272a01'),
-      (286, 0, 7, 30, 50, '634de3cd493b741938dadffcbf365acc490b12ad14dbd877e10c642c57452b1d'),
-      (286, 3, 7, 30, 50, 'cfbe5c1eab527e83d721a431e26f12a5797e17b05618f3cb08efbf9e7fb1753d'),
-      (286, 6, 7, 30, 50, '253e321ef63ad498ac233dfe37e2f01f09b9b7f9cc52bdfcace860fb076acb47'),
-      (287, 0, 8, 31, 51, 'bbd6ae1f1caa7bace718d37a8dab1145d1c624bb142ac2d2f41513f3e38a6155'),
-      (287, 3, 8, 31, 51, '43f31ba20d0ec54323759467e374ffa869edd2050ef97c1314a2b88b56da6a93'),
-      (287, 6, 8, 31, 51, 'aadcb667c4236aef3e3c461f6d7d2a8fb32bc503d6ceb246cdddf68b421811f7'),
-      (288, 0, 3, 32, 20, '6e18379e9387e57a23a90df81206598bc0a094bdacb133372920358eb54fc186'),
-      (289, 0, 4, 33, 21, '1b0bc1d46c248667686d38ab571fb125613d240cab39f65e6a0beac5fe48a50d'),
-      (289, 3, 4, 33, 21, 'dbf770760ede6742dd58a667b8e1be897c01aaff6c04effd668327736c9be51f'),
-      (290, 0, 5, 34, 22, 'fd90ee7630dfd5eea82c2e4e458ff1d2a216f99927e0324c88d18032519c0ac1'),
-      (290, 3, 5, 34, 22, '875e944eb824bef61c86eb92a7bb930df19bebed9f0551ed686674a134768c06'),
-      (291, 0, 6, 35, 23, '7f2e7c1d15702de5c8bffd3943bbf3986c84a4e6d0f4076dfc3f32b1444c87b5'),
-      (291, 3, 6, 35, 23, '33999561dd4fcdb59a8808b15e4553bb01ff719aa288de6eda2362eea3431b00'),
-      (292, 0, 7, 36, 24, 'e95b71004b46e2fe0c3a9bf9fe24336fc31c721281d0ac658a2ee6899e8c4e1b'),
-      (292, 3, 7, 36, 24, '9442c8af2acf45fd3c9f63149fd9ef77d2c31b3c6b82c2966b014b12f50f9b2c'),
-      (292, 6, 7, 36, 24, 'ff29eaee8ae43a47de7d0d95f97b7fd8e81f9bfd0315fe6455f0178f0c7867c2'),
-      (293, 0, 8, 37, 25, 'dc63d7e6f55a092332c8a52c4c3f2d0a1f6e9743916e2e1fddd02e11df765523'),
-      (293, 3, 8, 37, 25, '0657d7e95813c0e219fb23caa438200f79e693cc9412afb59a6c1769e99ec25f'),
-      (293, 6, 8, 37, 25, 'a56dc5da5642f1d12a5ad9da45e38c9b27bc1389d66784f531df485b5baad8b4'),
-      (294, 0, 3, 38, 26, 'ff41939702fedd17fc30f21327b4dc8e28a4708680b926549ca73390bc10935d'),
-      (295, 0, 4, 39, 27, '7d0ad0c57e5f7449af3f0c37677f2618f2bb25916f20036bc9c1035504878933'),
-      (295, 3, 4, 39, 27, '5820e6338846506fde83393bed7feea5ec611e158c0c9f7d726063f4a82b7021'),
-      (296, 0, 5, 40, 28, 'a176c1a03de99e114da0d292259cf174725dcc0c66805257f55fcf229e0af608'),
-      (296, 3, 5, 40, 28, '815e729e14584611977f173a2ce48031d5aab50fb0a4dac98f0b5f591991e377'),
-      (297, 0, 6, 41, 29, 'f4e5ecba71b904538d9ee52f585c5ceab786242db895cda35fd6344e69839925'),
-      (297, 3, 6, 41, 29, '431da84c1c781599ba4460bc3acb53084a9f413bab037acebb72ce1445d42bff'),
-      (298, 0, 7, 42, 30, '8efc41021edafeab7f78cbcce10a61fe1ed44a142a198d24ac86884ec8a21cd3'),
-      (298, 3, 7, 42, 30, '13d50fab6655d98c34af6cfcdd26e2abe6f1f86d08f6f3e0a50ec062df6626de'),
-      (298, 6, 7, 42, 30, '4634817aa9e8d5bd572816b16df9aeeb0f97713d646081e94bad2695474d8488'),
-      (299, 0, 8, 43, 31, 'e87660e2220735acb6bf539d019bc1d86f3504103943756be8faf173d0b631e9'),
-      (299, 3, 8, 43, 31, 'ec72fd3d8efe3890b1fd55a455eba373d765951e24a1cdfb0c06076349e39a72'),
-      (299, 6, 8, 43, 31, 'c144366d0a9f5593859514f5eb2b10c9e72ddfddacf53977f72d86c747ab9a2a'),
-      (300, 0, 3, 44, 32, '3445884afa88de15d49e5d8f60548c2fb92a70efc13bff5d2832f571ca7f84d7'),
-      (301, 0, 4, 45, 33, '3f1d80c9fa33c35b7417828872f116b6526b3d4e94ec041fc9e5b5b3ed2acb47'),
-      (301, 3, 4, 45, 33, 'ddd8d6efde667a24f82280d27ba1d2f65b97fcdca8c013658940db1c37567ff6'),
-      (302, 0, 5, 46, 34, 'b5d3333d9b25ac34f8b74714c5766e208cefa16d11fd5c2a6a654e8e8389e703'),
-      (302, 3, 5, 46, 34, '32dd0927bb10cc50a2f54706b929f095c4a98c92ae3df46190ccea52a90075f3'),
-      (303, 0, 6, 47, 35, '1d759ddfa0e7d0fe447f2e7b103eb61ba65419387816b7fcd1e62f7df1b46c47'),
-      (303, 3, 6, 47, 35, '4e0648097f816619e83cbcaf14567a36cc0eb4efb3ee1bf017a6367d61231f50'),
-      (304, 0, 7, 48, 36, '6176b7c5d05bcffb5c08f3fc36d7a2c697f47f93658d983d9a776932c6e9c642'),
-      (304, 3, 7, 48, 36, '9265f1da30fb00a3de0082d46734807d86eeb2831456f3ec927509557d2a0cac'),
-      (304, 6, 7, 48, 36, 'b0a7680c5fbabf39a82ca2e636b5602adb2d9da310ac53a40e1c54da73b33158'),
-      (305, 0, 8, 49, 37, 'ae92d643af0b50871330c01c3bafe2e84c053afa7132e7101cba26e21b3e6d70'),
-      (305, 3, 8, 49, 37, 'a057aa90c3cdec807638f12a08112ee88a40c0c5e7b93b08b426595358cbd250'),
-      (305, 6, 8, 49, 37, 'fed8e069bfad13bc16b5d4cdff786d383f94245ce4e8071e2b8bb719f0ce3d93'),
-      (306, 0, 3, 50, 38, 'b13fc56eef28132a46081d1fabcd356760249a0599a1f5350535be11aa347d60'),
-      (307, 0, 4, 51, 39, '056bbb2ddbc1722f2a134f30275a49b0d99ec4e623f69b8d46d44fdcabff5077'),
-      (307, 3, 4, 51, 39, '92459ab1e4716ae38dfff7fc67a1ca1d2a39b30f70aa426f8fd2303d5153da3a'),
-      (308, 0, 5, 52, 40, 'eaa58627c1956f358bd96c09d855d767015980653042ce3ea039b80a63da3eb6'),
-      (308, 3, 5, 52, 40, 'ae3468ecde654c695185b5fefb8b562eb3577d5a57f9b7e54a50cd55ab68e2e6'),
-      (309, 0, 6, 53, 41, '106862989aed77764be5964dbc03f340ecc3a30bb395795f17c5f005ee2dcb33'),
-      (309, 3, 6, 53, 41, '19c6d5e25127ad51cd10841d4a6f79ee7c5e7a76f1af32927a1e6eb720516785'),
-      (310, 0, 7, 54, 42, 'cc2b3e36bf8e6303133c23bfddc84586e4c86ca129aa5bec08958a79713e6966'),
-      (310, 3, 7, 54, 42, 'feb7fd91458c6780052f72fa8045727bcac85f02f1eb0ba8ee03e265d11264e0'),
-      (310, 6, 7, 54, 42, 'f60995ce45b529ec8a118b799772a7333809c21acb6205bf559c3266fd1a41c0'),
-      (311, 0, 8, 55, 43, 'b5028de2abb8829b58a0ad13ac142b38427a3a93f4319b662a7bed451a3db320'),
-      (311, 3, 8, 55, 43, '7a8e2ea0824d04413909d851290eab5abd703b779027bb882f8196d6cb6226a5'),
-      (311, 6, 8, 55, 43, '00ea4b4dd80247664074166e4104252b1105bea58b8b504eba2d8f72296af048'),
-      (312, 0, 3, 56, 44, 'bbb139a75b025e1ed5da32b4eb192a97a51cb6ca15f3ffbc79970f87465ba1c3'),
-      (313, 0, 4, 57, 45, 'cded1759fc3183862ac6a056b8f2dc793ecac873a39d7d94e659f1086c05201c'),
-      (313, 3, 4, 57, 45, '43504329904fa145da2c0073fc6480641a62751a9c7c2722c9f8a42aeea560e8'),
-      (314, 0, 5, 58, 46, '65b4f82709b57610f1c510ee5bfaf5673675061142d6372e84a7646ffa9af840'),
-      (314, 3, 5, 58, 46, '49097e2c431147c8bf3fb8f76f0c5af5622159b5bec0a92c349f3f8868cc575e'),
-      (315, 0, 6, 59, 47, '0f098ef2f0f0024094bfe17fa905f02baef00ef73f885d48e52d0b9ecf680784'),
-      (315, 3, 6, 59, 47, '82d5019105323abd67638ad6528c5f34728bc3acb6d5c0ac45d2f968acbe0579'),
-      (316, 0, 7, 60, 48, '780c4b909528c4803524e6b52371b3d79ca3b4d971ab6a91be581ef28f0b35dd'),
-      (316, 3, 7, 60, 48, '6d5d591c391921b6ab4841956939b4c773b4e516fff640c0efa622cd120d68c6'),
-      (316, 6, 7, 60, 48, '5d9ade4cfb9bb2dcd7b149849804aa91b75fde425bff26585092c18ebd608aff'),
-      (317, 0, 8, 61, 49, 'dba368a560215ea25ab5bd89a657798f6e493e84e25a251a684ed933379a0a37'),
-      (317, 3, 8, 61, 49, '91a6b2b5c8eddeb4d51b3eac28fc85be22ef7765e84063a378e5909c5d9f6add'),
-      (317, 6, 8, 61, 49, '99ec8571795cff64ca992866a3e216668899d2ecf057ea7ce1387c166b364499'),
-      (318, 0, 3, 62, 50, 'ba6b8bb6ec057b1796b0ba695d054fd75b3ea631a369f2f7f15aad9ff5a30a28'),
-      (319, 0, 4, 63, 51, '580e7552019fb6d4ba3120db3a0a3776837714615a19e7872c3820213b36ac60'),
-      (319, 3, 4, 63, 51, '8184a783e3136323e38d81b9c7ba2845319db6b825688e8e01fafcfefb8a0b1e'),
-      (320, 0, 5, 24, 20, '15cb244e5ca506f594525ebbeba8ad706838dae22ee2f8875d46ddf5f32e5066'),
-      (320, 3, 5, 24, 20, '7a6574ae8a51aa64f37ef5a449d9511a1cb626a720f32bba32afc6bbd1095e05'),
-      (321, 0, 6, 25, 21, '40882abd82a2eed29515e499ede195220ce1be43d1fc1a05eca5026f6b3f0c60'),
-      (321, 3, 6, 25, 21, '4e34bc63f5bcd4e10c4009a78693bef40e957e94fa7ef4128703b3c91fc8e2ba'),
-      (322, 0, 7, 26, 22, '6f89b647124bee921d70c2446fba33a7c8aec44d59dddc7a89c902c32bfe40f5'),
-      (322, 3, 7, 26, 22, '9ea5bb585345b9ea106323bfb52fb894188d3e53816cb7c2b768d2b1b81023de'),
-      (322, 6, 7, 26, 22, '5ffece868b6351d7a240b848883ea43264d2708f1710fd5f79604afba6ad916e'),
-      (323, 0, 8, 27, 23, '810a2f7ceee9b88806f1e755a9256f861ca7f234cc704147d27299c739ba6576'),
-      (323, 3, 8, 27, 23, '488c04b903ad3c88f5448a5d4024229e099c05dd9c0fd90170e027259c8be8bd'),
-      (323, 6, 8, 27, 23, 'e68d2b1faa181e3b4ce5eee95f425cc0335640acdc43208b401e26bdd0ffbd36'),
-      (324, 0, 3, 28, 24, 'cf030a04523a2469274d5d159793f73247af8dff78356f1e74008e05e0fcdb92'),
-      (325, 0, 4, 29, 25, '35c02fbbdc86c87b70546cd08f41ff7e4071c176f7f417a25ad9ab8394a04420'),
-      (325, 3, 4, 29, 25, 'e83cb5a92834ddba9c5c0d64ebe620ce3fd23329aae181bcc9a3b386d1f3aa1b'),
-      (326, 0, 5, 30, 26, '7dcdcc80047724b8633ac44b5328408e78c3d81c02e997e0adc716d3da66bd12'),
-      (326, 3, 5, 30, 26, '21678adbee4c8ed854b819692fcf1e37ec02b6a7a3c504b1c71796cc9d6866ff'),
-      (327, 0, 6, 31, 27, '59ce02e89c91a4e75439ac739f4c4aabfe6260f285adc4971cd334e0cea630e3'),
-      (327, 3, 6, 31, 27, '95c381a73af50cb21f2431f556253485dccd7b7f0c289834a915d1f4b134ee86'),
-      (328, 0, 7, 32, 28, '07f113a2f61079300ae25d85b189aa8dda4eb492e9d780076c4671700f4f9d37'),
-      (328, 3, 7, 32, 28, 'a1619f2a8f1c417f8318b0968e3b52ad087023e3bf50547d9659d5db920a4e1e'),
-      (328, 6, 7, 32, 28, '27912aafa7243af4155c0c48b2154544d94bf14d8e857bb2a1b7de621c85c74b'),
-      (329, 0, 8, 33, 29, '074f1b2570524c541c5157cc7a6611be6cdf6ad0d51737097df09394a756b332'),
-      (329, 3, 8, 33, 29, '3fb34fc4da7d2780e85a9c86c70369fc9df90dac2906d08d7bb428791995bd65'),
-      (329, 6, 8, 33, 29, '1f2789d0112bccbbd2ad344f102bd49afb7fc38318ddcbd6410d65c5dc8653a4'),
-      (330, 0, 3, 34, 30, '0f1129726b69221b9ab31d15043f03b8436e181df7abe7b5adf86da17560be13'),
-      (331, 0, 4, 35, 31, '76b56d77971227646b5ba5bb1796f4a0e695868721817dc28b3af91ddc67d9e2'),
-      (331, 3, 4, 35, 31, '3e9f6a8503e1a7ef8259422032e7a7866508eeb20ae1c79d7d47421aa233c67c'),
-      (332, 0, 5, 36, 32, '0923eb824025defb53421f38d2cfa73f08d447660c6fc2c5430b46729b92598e'),
-      (332, 3, 5, 36, 32, '9f2dabbe83c29632851c0f94076e923f5724b20b7976a59e0720461e9a79c00a'),
-      (333, 0, 6, 37, 33, '3d5ce98149bbeab3f909b792e73894783d4a92df73f99fb1e2e3817891210201'),
-      (333, 3, 6, 37, 33, '725c0c4c9bf5e6a8c1f020fd441511849603d6d77983fc29e87ed14b1876eb41'),
-      (334, 0, 7, 38, 34, '088c8386e162b219122c5ed2d4ca6601b0196f053b6ab7fcaa45d125cea7c527'),
-      (334, 3, 7, 38, 34, '6b46765149d88230e9d90dc7d8e63d1a15bd78ec948329ec460e71140f9489f1'),
-      (334, 6, 7, 38, 34, '0cf423481456f757e5f119f4395821de832f75ad60bd53a85c710bdc0f7b3a68'),
-      (335, 0, 8, 39, 35, '83872d37e4264f46f1fc9c62cdcf0b60a6e0f1a8a5d0d12fb6bdebd70c7b37ca'),
-      (335, 3, 8, 39, 35, '005ec4686bf70d35df6f023a7320094d2db9ae1753860d74e37f284a608408da'),
-      (335, 6, 8, 39, 35, '935cb4efed572f15d810b094b7ca4a4a54fb6307eaed2f33424e7ba16506e2bd'),
-      (336, 0, 3, 40, 36, '8e6fb1c9fb30baa5c102977e5b28b13233bb71ae6249e7c1607cacf4426afec8'),
-      (337, 0, 4, 41, 37, '0f8645156f5765ed78f5e79cd1ae075120f163de313f3a8a91d3aae4defa13eb'),
-      (337, 3, 4, 41, 37, '4fb96fc0983a6f523930e8e8d3e9273238419dd7d5ba6fd94e7aa2cb6b80d1b7'),
-      (338, 0, 5, 42, 38, 'c690a04a7ddf7266ccb63fa613b4b5fe2e000a4ec8700cb0762122515dfff5a9'),
-      (338, 3, 5, 42, 38, 'd2fef3c01d67c8d560cb52491ecc83e0fa7fcac7d5f9ba7afcaaf6743d327ffb'),
-      (339, 0, 6, 43, 39, '3bff7f0b89aad58fbf13ee0af80d0e0b092f617515dfb0e730b2d237e1f95408'),
-      (339, 3, 6, 43, 39, '3ff1126fa116dacf83dc646ef7c71772b1b8c63ef36382adab44490e176a35e6'),
-      (340, 0, 7, 44, 40, 'aaea76b72e5e437828f769997f027e2f35755a4016b6811aa79cc589b0826f8a'),
-      (340, 3, 7, 44, 40, 'e7fe9a203111d680f8bb2b7eb9b65830b856162f6d7919cc1e6fc6bbbc652c7f'),
-      (340, 6, 7, 44, 40, 'a23a74af2607461e0bdadf1cf8d5f4d002828297180135b219632cbbc98c0821'),
-      (341, 0, 8, 45, 41, '87449e970b6109cce2b6aec5a77ddf21d1d2e16e311865a9a05b04ec9adf5446'),
-      (341, 3, 8, 45, 41, '57cff1c8ccd08205837fb2771095cc0671ef152544ddbfe94a5dec8000b03cd2'),
-      (341, 6, 8, 45, 41, '6254335e5bcf6aa0aeda4ebaf8e0865b1b0d8da43eb6b782504107832533fb3f'),
-      (342, 0, 3, 46, 42, '43bed403d7f7ced3ab6b50cf222cb440e789b30a984c4a05053a60db8c1fb0bc'),
-      (343, 0, 4, 47, 43, '78017d39900dfd2f61abb1150f091e615465076fe8faf0b750abc6c308c88ea4'),
-      (343, 3, 4, 47, 43, '70a70264df6b23a32a68a009f062d8c4f3fea395282ba5cd6ced82c9251108f9'),
-      (344, 0, 5, 48, 44, '71a7b8305156b99e1b7ede2a8e7b574a3312fafc8e8ffa61f866110f2003ce5a'),
-      (344, 3, 5, 48, 44, 'f2a3e0499b1ab6b93ccc25edf0096fd12a59634eeeb4442c0ddd793119ff39fd'),
-      (345, 0, 6, 49, 45, 'e53dd47810a63fc2716c6e0a40fd4fb111eb4bc0160212327255ec19f16d0086'),
-      (345, 3, 6, 49, 45, '163017d333b5fb45fb5d4eaff7d32b589e62eacb22bfdc4c1a535f1f4b3921fe'),
-      (346, 0, 7, 50, 46, '969fe1ecf61a385455bdcbf74ac0b316512629c1eae2ec49b8322c3c2710594d'),
-      (346, 3, 7, 50, 46, '968fd3e2fabbe45600f655f4f61656be7514cec86adbe12e17490f4ef2596a08'),
-      (346, 6, 7, 50, 46, '0f4e7702a638d9c22cbfe416ed91bd4af219261fb858b1131d9d3b90aff6fa48'),
-      (347, 0, 8, 51, 47, 'b48c0831814cfd719adf5c5fb53c4da40c94e55700d422998e0bdff327147f6d'),
-      (347, 3, 8, 51, 47, '9562a7931f4f0cb3461813cbe42ef8ec604a63db71a9ebf3e2169bd285256837'),
-      (347, 6, 8, 51, 47, '7ad0ce9fb7468c4245831803fb2a9609a80dd044818aa53c507915f294bd16da'),
-      (348, 0, 3, 52, 48, 'cd4c54fcd003a59181a37219a0252f4fdad5ee22f5ce0f3d7b94ef5399758aa3'),
-      (349, 0, 4, 53, 49, '3f491ad498a5dcf232a8abc96fb32fb9319f48f0e9898f26c36e34ebc69cdfa5'),
-      (349, 3, 4, 53, 49, '0518c1cd5b2d340feeb8d9f9909cf01c86f7c95c297d1a6f2d1878d5f52b6b85'),
-      (350, 0, 5, 54, 50, '8411a6e6758d91d9dd735e6bf477d1f8ff3dff265c93aa8b9b05c5ef06a0f202'),
-      (350, 3, 5, 54, 50, 'ae6412a322bb382aab01635f98cefc02796ee166f86e502c66c180d9891edb1f'),
-      (351, 0, 6, 55, 51, '2fbfecd6f8021cbb6f27cca3a184f77c103fd3ddfe9aa0242fb3d42bce5c3630'),
-      (351, 3, 6, 55, 51, 'd22007679dc09ef4f5380c04bd7d1f9c58b468231d8eb2561e69ecb0d67be800'),
-      (352, 0, 7, 56, 20, 'b7c2be55d13c9205e1265c62d5b04ded15d11ed6f575af586d9864127714040f'),
-      (352, 3, 7, 56, 20, 'a4ebfb3763f0cc783676fe2b0fc3f00428eb40b6811cdccedefb3e650f07f52e'),
-      (352, 6, 7, 56, 20, '006c7e8cdca13f1f04d56640349e44cd56fd5d3606a8783b6e7bb0cf8a502a5a'),
-      (353, 0, 8, 57, 21, '75a51091b5eebe12b16732cae1bbd20b2a30a98a9f1ad4d2f03f2ed06be87a96'),
-      (353, 3, 8, 57, 21, '14d7d0896778c2ff0902e3c97072f4ecba0a0bbe04c7857fed3b70550786db9d'),
-      (353, 6, 8, 57, 21, '6e477039742bd5b8713d3a33908d7cb79d5fe4e25106c747de680f97b54cba7a'),
-      (354, 0, 3, 58, 22, '3901aa2e46f07e0cf981030a8fa06e57d8bbfcaf38ec87f3c81c67cda4937d78'),
-      (355, 0, 4, 59, 23, '656a67bb593697ff70b2fbc509ac673bcb830657f6b4dde5041fa06773f80e47'),
-      (355, 3, 4, 59, 23, '177bc6d21c675e8eab6632232646dc982613d3da1f9e7bb40696f7e786e0422b'),
-      (356, 0, 5, 60, 24, '539bc820371c598d88f8c97953487fd2ddd81fa7a1902f72615aa53b101baaa2'),
-      (356, 3, 5, 60, 24, 'b9397cfd98a4b979e6b6d471a92d26d47966672c596ea255844fa2632ba5af93'),
-      (357, 0, 6, 61, 25, '58a385e729475c4febc528b7651d49df8bb59ec40cf483e3bf2b8a2699698176'),
-      (357, 3, 6, 61, 25, '338b1099745ae8d4df4983c9e7d11651ec57a76c4fea3f02c2a4db630b90b77e'),
-      (358, 0, 7, 62, 26, 'ac927108f564f6ac8de4ad709669f56bc83f5301b124977f4dc18c0ea08cbd69'),
-      (358, 3, 7, 62, 26, '16efd1fbfb32346eb3a8fac00b2ec535a1fbe9eb7c0b70146300d804ea785541'),
-      (358, 6, 7, 62, 26, 'a75da80b08308d043fa85c23b86dde40b00cde2a025f1fc21d5fe8ffe05cac72'),
-      (359, 0, 8, 63, 27, 'ff5a4dd5862ca99d9376dd0e8f9b654ef91a3cce24f426281395bb63b890c0d1'),
-      (359, 3, 8, 63, 27, '92b0db1dd5e876b6cc8c1037da13dbe4ace155d7ea69902164b13a808866495f'),
-      (359, 6, 8, 63, 27, '22b28396039575c0eb35715d0d7f1b9ef2c89928b8bb0c1778511f5ea10337d5'),
-      (360, 0, 3, 24, 28, '6052784d8314eb69730026ca4d447389b3f712c14cf95b697f06797cc660e97c'),
-      (361, 0, 4, 25, 29, '1c34cb13fa5f927d678ae8e03f3fc517f80b79f388147cbef5dcf754f1983b11'),
-      (361, 3, 4, 25, 29, 'bdd92b8d95c266a800bcfb89ad59461193e1fd8d0d9ab6ec14fcdc80be3664ec'),
-      (362, 0, 5, 26, 30, 'a70861ce66582417065f5b8058577f98871aa73d4c4088cf1a760b9b3fdfe531'),
-      (362, 3, 5, 26, 30, '2ea0838aae6a8368c4cec2a2f176171fdfd4e54c3a47a47f03401c5aa439debc'),
-      (363, 0, 6, 27, 31, '86f75fdc95238157f2210e4d201f8c549ad74fa4fc51f2952e35c41479d745f2'),
-      (363, 3, 6, 27, 31, '597783d90ade3162c4aa4da144816ddf4197ac39546ac0aad1eb14b699b86dbd'),
-      (364, 0, 7, 28, 32, '2f1dabb0c278dffe9c035e8a38f82ce857f2d5c7e205cb23d01d3b58481c11a7'),
-      (364, 3, 7, 28, 32, '074c28bf5144d115758315e65478476615082a68afa749b24178209aef23b4ff'),
-      (364, 6, 7, 28, 32, '1de6139688ee650899cd94a16c41c8db7f51979098ea7c8b901e2724d09f57a2'),
-      (365, 0, 8, 29, 33, 'bb8ee8f698b99f0dbfe15917c0228307ab54035c7f558eb79dca869040fea7d7'),
-      (365, 3, 8, 29, 33, 'a0003299898b67d32e27045f1dcf763f6a649b06868e605b40867116b1249896'),
-      (365, 6, 8, 29, 33, 'f4ae8417cbd5a4fb11bb0711d8d932d3eb85baf1f6f67391f4ba6c4cf78578e4'),
-      (366, 0, 3, 30, 34, 'ab86e75013b5d7887b3f842fde8ef319339ed00084f680007ad88100ca5fee2c'),
-      (367, 0, 4, 31, 35, '8b8ec239347c801ac84530f0fa42dae7e474cda04360c1e24a218fe7e3e531c1'),
-      (367, 3, 4, 31, 35, '6b12580d2c93faa96d8d4815f53d1166306eeb733709117a59bb40cd2c595ff6'),
-      (368, 0, 5, 32, 36, 'f78fecfdb11e5fd7d1728750b36e351ed069776fd699d3c9a809a07c0648a55e'),
-      (368, 3, 5, 32, 36, 'b731099eabd46da9cfac097c6cb4f75c96ae918854b5bb4ffb6b24b74a8ea67d'),
-      (369, 0, 6, 33, 37, 'd59d9eefe8d564c6c84e6015d8d1304de1945062a3374e243347519e969631f7'),
-      (369, 3, 6, 33, 37, 'f527d345157de8c304e080e3cabb5dbf9e2a3d59d834a6ed94d1e18a4b3ff35b'),
-      (370, 0, 7, 34, 38, '0a3ddde2c932ad02ddcd5e0fd6eb47cee181a54c0c31ae7a1112d06470c3d373'),
-      (370, 3, 7, 34, 38, '47ed7f1c84a512a2dca0df98e0a0e7c7c0c04c885050306e79e29593ea310d88'),
-      (370, 6, 7, 34, 38, 'f6ae9c159d8203d3043d658a5849b5b37a7c533cb8eb8d47c291a145cc09e744'),
-      (371, 0, 8, 35, 39, 'a0ad2a16cd27e3ed9ae6d16e180059328c74c10e0ac5a4f08f91fcfc967f8fa9'),
-      (371, 3, 8, 35, 39, '73aa2a782822f4ad904aa08f0ef72ae2be9e1e83a76fe98d091f142e38d902e4'),
-      (371, 6, 8, 35, 39, '1845e4ea645bcd09d0e64287cb3b6a3730bfb59edc55c14537567bafe57886c7'),
-      (372, 0, 3, 36, 40, 'fa9e8d7f72c200245fb911f404c5b7a28416371af99ac6282bcfea76f2b4b61b'),
-      (373, 0, 4, 37, 41, '53883b7e09ee37f9c54ea412b8e7f09817a6e89e42278e013a0f4af5bdca5a14'),
-      (373, 3, 4, 37, 41, '140c2f2f69ae3db97ab5010d7f5a3655a236d391c6aee4ee2a85d5650612d2e4'),
-      (374, 0, 5, 38, 42, '9d1bf61ef91ae382b409ad8166b9d9abcdcc566e461af8b2459ebb634fdb1c35'),
-      (374, 3, 5, 38, 42, 'aa2bab4a123ff29a2319eb2fe7a24d6fd69fc7a90e3dc51d5040bde3aa43fbc1'),
-      (375, 0, 6, 39, 43, '9d9b56cfa50bdb84d6599e9f95fdf46b3306e114d9ae5ccd099fd8f0acbd45b7'),
-      (375, 3, 6, 39, 43, '052f876df609b4ffc6d7907cc9753c66305b4af3c3c07a2eba4d16b136e52a5d'),
-      (376, 0, 7, 40, 44, 'd2a264eb36fd274da2848fd3fcfee2832dfa3eeb50e7755099a76b6ed4fe9be3'),
-      (376, 3, 7, 40, 44, '76675681d07cc12354122846d4fefb5e2273a206bd2fe89d5890aacee4c8e121'),
-      (376, 6, 7, 40, 44, 'cff6724433c66003b9f92d57633a4e1b6df89078ac0f9abab085bd5036251858'),
-      (377, 0, 8, 41, 45, '01851ad769c611c9b27cabd184b338e27890184f4a7a307d81b65fc559451266'),
-      (377, 3, 8, 41, 45, '7d74692451133e37e08b621bdf4e967c3fd021eefef5ebe3888ba0fcee467b1c'),
-      (377, 6, 8, 41, 45, 'f0c9f3704d5a32d66890d92d6042769c5d58b3fb6eaca5395320750bac224f0c'),
-      (378, 0, 3, 42, 46, 'fd4331f8c4ace8698a63d9a6f83acac99ed5eb4009a75dacc49ad01ef6e174b2'),
-      (379, 0, 4, 43, 47, '26bc27dfa69b19853222fb9b8546dc5b498cbfd7680431f1f0627c3802d710a7'),
-      (379, 3, 4, 43, 47, '22888e26916ad693a9f110cf462697497c1d3d7b60166da4f4d31b04ae84685a'),
-      (380, 0, 5, 44, 48, 'a570700b7954c91ec7c256d7bc0c0f0ca03ed345a4d01d18b000a1747a66186e'),
-      (380, 3, 5, 44, 48, '6add5edf345b4f0c9a4e6b6d6d42ef1ad683da62842b240475e3fada34abec1a'),
-      (381, 0, 6, 45, 49, '0f2ddb6d75dd5025f2c4c1005c9f9f57d01c28c7460bf8bdf2259134f4f75485'),
-      (381, 3, 6, 45, 49, '7af2d71b0bed4a8ec4696571602c9a7f7c6a8a132231b438d27578d7fdd34fd9'),
-      (382, 0, 7, 46, 50, 'df338f2a5af61ebfd4f4503fc7344d47bfc50489ffcc420e1d2c2cc1f89ce176'),
-      (382, 3, 7, 46, 50, '13bfb9a0d83813ecddaef742c866be9b282b3a7ca2d7398c5e6bdb73bb3db1c2'),
-      (382, 6, 7, 46, 50, '00e3c4b6a12a23c58c5166b559c8ca7d1cdf1b220b2a30ea818e0af20c7130d3'),
-      (383, 0, 8, 47, 51, 'f1795665608928c5dc0370fa4368272944698124c31ef9bd21590d3f05dff2b9'),
-      (383, 3, 8, 47, 51, '317bfa4cee988774ebe5345a4bf1a26771a4ead1189ccada7f2a5a0f5df59f79'),
-      (383, 6, 8, 47, 51, '6509a5ef1725dec15785ee92b6c4798ebc3f63ccd43ba4720aa2c0374c190b60'),
-      (384, 0, 3, 48, 20, '1b656362e04f237b9a9487281ba3bd6b8cb5fb262ac67da90dcdfa580bad8031'),
-      (385, 0, 4, 49, 21, 'f9d69a970d8943f52a2d31de4291be81447cbb96a641c60125afc9f07e0797d1'),
-      (385, 3, 4, 49, 21, 'ae439da0e1cffc28168202cdac9ccc2edee90d303397c82a31f89f88b64d1a0c'),
-      (386, 0, 5, 50, 22, '58716471ba25df8f3cdce265affeaace58387218acbeeaaf7165add3dfdc1bc8'),
-      (386, 3, 5, 50, 22, '41d2f4addb41ec84a061833c50278c4b33220cebc4dffa48119010f5d41d65fd'),
-      (387, 0, 6, 51, 23, '66ff7dbb02d4417ff6beb58276cd36bbdffc27f557b155f6b4d3c454103a35da'),
-      (387, 3, 6, 51, 23, '4e029de56c6d8967c8cacf18094bd2d8011fa480a008984e8685818cd914099a'),
-      (388, 0, 7, 52, 24, '5807db611e665d6a28f09e0a3c00b781cdde0ff30a3c49fe312a59246682826c'),
-      (388, 3, 7, 52, 24, '97eb39a179570da45f3b84144342432fc899da03a1d10f037e2ff0cf6b0b6bbf'),
-      (388, 6, 7, 52, 24, '9aa6de63c872e6ddbfd6f85ac1cf3de81be3a9fdc277b2ab238d51b285ef1669'),
-      (389, 0, 8, 53, 25, 'a246880c5a7111b02032c5af8e44b3b5e74fdf8269e2721ab68892f19b02d28d'),
-      (389, 3, 8, 53, 25, 'b08f76ac073a0ffad19c7889fdb79d55dac32fad1e5429678778c489eb92540c'),
-      (389, 6, 8, 53, 25, '69d1bb7dcf7f38b76cd7a1cf3332f723e7de635d5366640329eabdbc6d586a9e'),
-      (390, 0, 3, 54, 26, 'f1223cfc4503d6036af53dadbe1c5fb44c0649346d38c67a0ba9b4bbdc3c48fa'),
-      (391, 0, 4, 55, 27, 'aad8340bb61932cdeecf69307100b220745ee476c942bd3ab235de773bbacba1'),
-      (391, 3, 4, 55, 27, 'd523ed244fc0334e5fc57e94c31c39d1b6838ea8b920a1b77ce2e518cc270950'),
-      (392, 0, 5, 56, 28, '2445bc455130f0c84a9cc35292c293b5c9c8a1711ca53352d741e9e61f4e727d'),
-      (392, 3, 5, 56, 28, '86aa6a7e2f59dc12e198456f9413a0ae7e93603fd30e86ce20f9cac83a92626a'),
-      (393, 0, 6, 57, 29, '3022e40d3afa4c606c1d5490e16bc6450ad0a5fe4ac3618ba45bb2a6a676f2b5'),
-      (393, 3, 6, 57, 29, '3e4e32efe6e83b595a7c6fd337e997bbd5f5c41e838ae1f0218d84fab14e7a2f'),
-      (394, 0, 7, 58, 30, '6eb6dae0eb7c1a063e80a3d173e13c8db868feef560cafe1a529d37584e96f5f'),
-      (394, 3, 7, 58, 30, '1283c4b4e205ee853d3288dae9b296ed3cc33993497ed69fee38f24fcbb61c64'),
-      (394, 6, 7, 58, 30, 'dee25406d7d4cae7612e040a1051ac0f902fc260b7d34344c15c4a22ec94a019'),
-      (395, 0, 8, 59, 31, '2b02e1d701a37ad64e0d2e1838e243544f62cc3a67afdfb3a282e4ddee035ffa'),
-      (395, 3, 8, 59, 31, 'b231d47088bea1bd8274c305ccaf69c2a84b8cde0dfbfc3073567bfe8bd418e1'),
-      (395, 6, 8, 59, 31, 'c3503dc171156857b32de8175adca46e9376d94648de8749581299c2d46b7982'),
-      (396, 0, 3, 60, 32, '3baf300d40e467cda35da567be5a153c98be2528792d61878a3d75810d293367'),
-      (397, 0, 4, 61, 33, '4e623d69c6e383abcfe478756ca6152679f8e2863c1bed36855f33e929fb038b'),
-      (397, 3, 4, 61, 33, '3929b21f3400a5252d177c40c81fdad442e5ac2bb2339dcc42faefc970740f33'),
-      (398, 0, 5, 62, 34, '153f034b9bc9249ee7278900395e38d335539fab70091f0cf5b773570564e0a3'),
-      (398, 3, 5, 62, 34, '0a25dabfa88a9d786997b11e357d5d45141de2fac64bfa48137c21768afb7aaa'),
-      (399, 0, 6, 63, 35, 'd0a2aa5fa3df4adca90fe61e454d812def74ee216e97b2319a17de8340af9fcc'),
-      (399, 3, 6, 63, 35, '3572f7323cc61287121da5dd9b359b72a3eb55a9e3fd4d2ffa5d0c71d44323a7'),
-      (400, 0, 7, 24, 36, 'a3c5f7f7f382cc97797b3f97e6d91deb90c373791254b5c8b42d8d17e74e0898'),
-      (400, 3, 7, 24, 36, 'b917cd4e1cd4c7e94fb4bf9d81e0314188b5690977decfc645e079e1e0d7cd8a'),
-      (400, 6, 7, 24, 36, 'd7d39f33b494b2bfe9f6c1727d8d535b690a1d50ee983723746a0094659a5b1b'),
-      (401, 0, 8, 25, 37, '49775fe67e0c38c40d530c1b813f0cf0cc3865a4593ce6ed75780cee7b5e0b09'),
-      (401, 3, 8, 25, 37, 'dc30ff6cf6abda6f7c424f594a563cca23d4df06dd62bbf78f75b1f020e14eb2'),
-      (401, 6, 8, 25, 37, '806bd53fd92147cc55e7492f3a44333d8e3dcece4197d2cd24b03c7f6833da97'),
-      (402, 0, 3, 26, 38, '69059cd182beb31c63ba9a7954fd1dfdc0c90415d50ec56b0beba3d81572a732'),
-      (403, 0, 4, 27, 39, '719efd8f25a522dac5507811d8d498040e8353f4e487e73d9c6a7f8359a98641'),
-      (403, 3, 4, 27, 39, '92015524d2ef3ddc22e5a71b05792aea5cab79fcda356910859f6f97749c5b20'),
-      (404, 0, 5, 28, 40, '1c24855d760e862ba115ded6df11aacc21d975fa3f5cb37f39f57c9be7aeaeb1'),
-      (404, 3, 5, 28, 40, '7bad96c62965228fb6ffb83ba18d300a24a571b0bbe7bd11aca698784a8e4d6c'),
-      (405, 0, 6, 29, 41, 'a541f4483d9265a4152ae4439eb1a5445ca55c400865a42094815072e27bec7f'),
-      (405, 3, 6, 29, 41, '1975541bcc14e0b3cb85563b0be918467702972498f43f4965363897c934b651'),
-      (406, 0, 7, 30, 42, 'c1d9b6e3a720bd3867773684e04722e37b21ec89761dfd644d34c39251520031'),
-      (406, 3, 7, 30, 42, 'f2b29fa44ace8a3158a668a90f809e62386ee2a60f8d0b06135019148f7e60eb'),
-      (406, 6, 7, 30, 42, '09100dcc27e097523bbb55be2904af5be910373f433f8458bee3e25397762fdb'),
-      (407, 0, 8, 31, 43, '27da4a7cd2554e747616a71cb3c1f4827ebbf227edaa91a10aa7bcc425e5f872'),
-      (407, 3, 8, 31, 43, 'ee8e3e197304d6286327c99d1640982c6b88a82dea399a7e6b090870cf45c827'),
-      (407, 6, 8, 31, 43, '043958ec0b4b5ea6a2992ba7ca7271eae78a29165cc9d44b9bb70c008e9a63cc'),
-      (408, 0, 3, 32, 44, '1311296ab9f451f6a520a00fae862fb4cdba3480282038ce97b5024d9302c6ca'),
-      (409, 0, 4, 33, 45, 'ffa1d5878c7f551adbab0b5a243c0e328f0e99a6b55c8ac027296383aa42f4e9'),
-      (409, 3, 4, 33, 45, '28773377b3ab74b427ffb07f00c305780dabf0cc88acc609d77c151dd3bfedbc'),
-      (410, 0, 5, 34, 46, '9c1304a7db30c84a6ac3980d2593dd7e4df5362158134b1889d5a4fb2076a159'),
-      (410, 3, 5, 34, 46, 'e73256b19817b637f8648e5e017320cdd767d2923e1a77f3be7c59040c74f82d'),
-      (411, 0, 6, 35, 47, 'f1e509c524012964884b23421a7bba713555ac32fd6d91fdce4632448a27c2ea'),
-      (411, 3, 6, 35, 47, '715b6a314d207fd8ac93ec456676848f1e9b2aa151561d2135f89e3c2bd17bf7'),
-      (412, 0, 7, 36, 48, 'd0444f34aee6137071ca5102309f8bab66e5456b7c3545a5739d0b578769279e'),
-      (412, 3, 7, 36, 48, '8f3de45c1fef0df396dac53841cc2beac0eb18cc604e14cdb9452ecbd0390a34'),
-      (412, 6, 7, 36, 48, '516cce2ea8feb965493897c35616900bf727c86d723e120b8a6ed62370e20beb'),
-      (413, 0, 8, 37, 49, 'd1483256967aa4eca9aa67266e3e734a071680a733b69451bd7e3089f348e8a4'),
-      (413, 3, 8, 37, 49, 'ab9e29259066ec1a492cbeae01de652124573450013f48a2c13c32be9b6960a6'),
-      (413, 6, 8, 37, 49, '05dedb11d5a15aef4708af157b0e5f979e3bbfc61f8027bf0cc42a0eadd33ada'),
-      (414, 0, 3, 38, 50, 'c20cb1408807f2f943b4e1c519702b387e15da1c71ff470ed7062af1a6d39c51'),
-      (415, 0, 4, 39, 51, '8e942e1e63258eee1041ce5357ae6034a027d128e57d8fe87527d9e397410b4a'),
-      (415, 3, 4, 39, 51, '35b0854ebc3153b652f605afbbad29a1793d90ae24ca417b87fb04836a081d34'),
-      (416, 0, 5, 40, 20, 'aad55d05a4fc8989ddf3dbe7c4c020c4a038bc555838b9521b2ea4724ab44520'),
-      (416, 3, 5, 40, 20, 'e205d045fa97ccd640fbfb5a45a0883ef0ff0301705a31c1eac816fffc3ce959'),
-      (417, 0, 6, 41, 21, '102033d5d4024894ed87989a00aeb41d978bb8e9e1a3db74543d107e2d1aad36'),
-      (417, 3, 6, 41, 21, '7767c006a50e58ffca1a747ed04b994c867a6d76c264be8eb25f3484fe383d6c'),
-      (418, 0, 7, 42, 22, 'e69b5f9b1b91cae97611173ffc72c2f2ddbdfe787a4377b558bc27e501ca513c'),
-      (418, 3, 7, 42, 22, '6fb8646745246e5450ddc8e7007a93a1d33ae5a14fd31cc5d6741757e2814e4e'),
-      (418, 6, 7, 42, 22, 'adc055eddefd6ad28686b091aaf66f2db9e7c6309d16d1f6ec278aaac1ad4eaa'),
-      (419, 0, 8, 43, 23, '9c6b8d443f736f5864ce2d37216cc0a23a610f8a3284fe5e3b8a9524f3ed5344'),
-      (419, 3, 8, 43, 23, '25dd254916e0c3ca9fa1a770ed7e39c938e41495c3421ea929ffb697b25b51c3'),
-      (419, 6, 8, 43, 23, 'efa24a9e093a5ec14bc4cd9f50794518fa85de057746cc5ca38ae09caa0353a5'),
-      (420, 0, 3, 44, 24, 'dd471b7ca44d9851018309e22137f9af67c2b8c88b33e98b5052b366825f7142'),
-      (421, 0, 4, 45, 25, 'ba8284e7ee267f0a8c9089db435adaa745abc0514f8640dcf80571da516a1d5b'),
-      (421, 3, 4, 45, 25, '414c0970d3fcf91b527960be219573b980745d7961c3594590dc370bcb9599d6'),
-      (422, 0, 5, 46, 26, 'fc4ab5f1224e99d105728ea429291425e12e155798c6a805d49d06d1cb7910a0'),
-      (422, 3, 5, 46, 26, '91c3ad5603899a2f8ebb02f645acba0e7eebc75bed7082460556e1d2b732b24e'),
-      (423, 0, 6, 47, 27, '39db9278845d82c714735201e0f423801200cb65e6ff8129439c09cb5581623e'),
-      (423, 3, 6, 47, 27, '8832527dc1ad4991de05f107fde54308d2c7b8fc7c647b9bafcc58ec24ce0bbe'),
-      (424, 0, 7, 48, 28, '9db1c33592a0b3ceb90c81599846877b73ed4b37094d0857a411912630255e08'),
-      (424, 3, 7, 48, 28, '4a869e13b22bef25e735c2f965b264b5350fc24ee220b759270b4bff68b75f29'),
-      (424, 6, 7, 48, 28, 'fda70fcd16bf96439c15d346f505b5e9e62e8bff48bfe2f403c33f47ba3a1ec5'),
-      (425, 0, 8, 49, 29, 'bd48c0eb9eea5a5a3fadf3b5a3ec7afc7159a13d244c3ab4b617693a63d0d6b4'),
-      (425, 3, 8, 49, 29, 'd219166d7f23a0304acfc09c41f042f2f42439c51b023a5d38b720397b05b868'),
-      (425, 6, 8, 49, 29, '7efd4a0b613b97075433521e4ccf1e07932574f2e315c793ca18d8abce783038'),
-      (426, 0, 3, 50, 30, '42aef6b2f0704cc9a73f3c7ef31d4b3c8741715e2628773ef551db82fde22b30'),
-      (427, 0, 4, 51, 31, '8747bd67ec1609e0bc3e20862e249be95db207507d7cfa906f43efc108ef2ff0'),
-      (427, 3, 4, 51, 31, 'de7d62cc1f2d0d7a2afab72567730fb30c99bc79ad7437c39592a654d4d643b3'),
-      (428, 0, 5, 52, 32, '62a1731e9e92e3e5835329dc8eaef60aed5352b484be83141417a545a44baa57'),
-      (428, 3, 5, 52, 32, 'b58207c7d08992e93d78f43b002759f482355eb27912002947ad2e03f1c2d2b4'),
-      (429, 0, 6, 53, 33, 'bed3389ad23bc5e5c78e071b9df31f47d6ddcef57409d308ffe0476818593e33'),
-      (429, 3, 6, 53, 33, '7eb371b31dc92cd1ce5687ebd01c509cabeb6e9633a2dfa7e073f1411e15e30b'),
-      (430, 0, 7, 54, 34, 'c1cefc980a6e0da91b769ecc698354032338abe329535df3c5921eee41f92a93'),
-      (430, 3, 7, 54, 34, '20ca64ee5d22e79d5b88276459834c10522befd345e3adf6ac3757e55b6358a5'),
-      (430, 6, 7, 54, 34, '688bde0750bb2b5821a950a61dc116b569efc777f24ba0b0e0ffefb3c99d6a04'),
-      (431, 0, 8, 55, 35, '99e448a557b046abe60500cdaa69272a3db25b9f5b03bc12a6e0c1e520e14bb6'),
-      (431, 3, 8, 55, 35, '83e5bd8770c71f45bab387a3ea3dbf9b59bd90fa8bb4450fe519a6b89f2d55eb'),
-      (431, 6, 8, 55, 35, '6827ca91cf888b102d91c6bea574f1ed9975689119583bd91648da122cfffe68'),
-      (432, 0, 3, 56, 36, '7534e82a8439cfda4450d46739f9d703e3be99e150078a9e864a5f99dc4f0e1a'),
-      (433, 0, 4, 57, 37, 'e92f2bb19c9d862269b5336f4ea7865c39331e252e38fdc7772421ea38964571'),
-      (433, 3, 4, 57, 37, 'ea6a120371e13e716bf54cf555d2ec4f79043fe803199bf88a3ad5227e2f562b'),
-      (434, 0, 5, 58, 38, '70b3e0ccd15d32db29c39106e91d09d5b261f53de84d15791ae992e63effa176'),
-      (434, 3, 5, 58, 38, 'b83d0e6d2a60dedf9bb11038bfa6b054732bc0d1396bbee749ec12a5a5ce4e1e'),
-      (435, 0, 6, 59, 39, '3c594f8c328d7d1175da5ae771f0224c615f0e39a54d6d09372fd17ff8a7aaea'),
-      (435, 3, 6, 59, 39, 'bb474e3ffe02763ff5d363f4e933c030e299593375419b0bb01191e53ef11397'),
-      (436, 0, 7, 60, 40, '10138db618f7503075915c9e535d6bf051e00b03c4fab5e27350d701df935de1'),
-      (436, 3, 7, 60, 40, '1ce4cf5cd66765ee17d0295f92d497725b550c8b81eee0bc158dae2b427c9f1b'),
-      (436, 6, 7, 60, 40, '16d8a724a2c7f4b7b4734ce0613b3a1f356d01847562baee78c53f0b62bf9548'),
-      (437, 0, 8, 61, 41, 'e7082913f0aba84436da44f6ab33711ad5c30dfe95ebad948bb0ab4284777a00'),
-      (437, 3, 8, 61, 41, '82862844d6f8e1c6851a2a8869c0e3f64f91ef5b01961dd72b64fe9edffb2e08'),
-      (437, 6, 8, 61, 41, '8b480697b3bee51e2dc7d81d9cd43cb85c6ebc40c737804cea09c745cf47b934'),
-      (438, 0, 3, 62, 42, '880b33b60dd625a8578fdec7f8907887599051694278c6b56be2956ca93065c3'),
-      (439, 0, 4, 63, 43, '738b2c1839f8caff573a2b943cfc4c2055022dfffe2ca14b1e4bf1fc59713501'),
-      (439, 3, 4, 63, 43, '12a5f84edcaab2684fa3fcc2b0d1bf640d39ac6c2cd31fe4d5cef9a13c8677ca'),
-      (440, 0, 5, 24, 44, '63ed01a03d8f6f2c7e0214ed30a839f2c8748058ecda9a8bd8fe3b0eeca283cd'),
-      (440, 3, 5, 24, 44, '8d9401cccdf46bfd3d0e7da297cdc8ce91d47ebdfcc3141d2f86ba4ca8323e78'),
-      (441, 0, 6, 25, 45, '08c1116c3e336d26c253d395b6bf50a705d9cf95df61b4a6ff31ba7f13ec3bd2'),
-      (441, 3, 6, 25, 45, 'd9c7bc9ae15c0c7c87643620ad1ff06fd6ff7608c08160a81eaa2f17b19832e9'),
-      (442, 0, 7, 26, 46, '82625ad4e03039605ca2c55d27297507e1591992962a6782f5a7c207f6862e78'),
-      (442, 3, 7, 26, 46, '9eef7d71f874bcf6b73dbe2fa2b9c50b01a302a7bdec049f69e63a13fc29aaa4'),
-      (442, 6, 7, 26, 46, 'd88d22d93fc166b9a690db067734732179d0110c7cae20df7b3f3dfd03734640'),
-      (443, 0, 8, 27, 47, 'ea4eaa71bfe75b63edeb4409eb779fdbcc1938ab9b8b13582e80e0d66bedfcdb'),
-      (443, 3, 8, 27, 47, '64844f4a0b05c415cee91e765677176015a2191e13626ef0c673754f5da08019'),
-      (443, 6, 8, 27, 47, '18bc8aa4de9f294437cf3b4d5e4a8a7b1e343f358ecc02ae8f2bbf7b595ae099'),
-      (444, 0, 3, 28, 48, 'ec884c1f16e51533b6cbf28cf2a53f5ef32802227eead68c35af0cc7bb9a2d3f'),
-      (445, 0, 4, 29, 49, 'f0c452e2980047e84cefe5720acbb7b4628723124c401863858e9112124199db'),
-      (445, 3, 4, 29, 49, 'bf92c5331d23b581bc0b6294c05582a0f8a9d8f5fcf7784c7638664c51294a25'),
-      (446, 0, 5, 30, 50, '6aac3e228e5c0a307184642e58a2ed892995770c6a94ac94c4504d5ff2bfc6a2'),
-      (446, 3, 5, 30, 50, 'fa518577cd93cf7f7d4d798940c2e79bdcdefa091da8b9684e11106586c5ea92'),
-      (447, 0, 6, 31, 51, 'e00e351be33c8ac39d58a954e06059c53ee124dc60f473d1a138ce45cee845dd'),
-      (447, 3, 6, 31, 51, '4b3d7c0f66efb42fde587645df8631a3d0e160c26a1c4ebe2010cfc7661a5357'),
-      (448, 0, 7, 32, 20, '5a55bd501fbacafb179a3d20b1c55f5e1f22745ee2a98314cf83bcd17dc144f9'),
-      (448, 3, 7, 32, 20, '4cc70acf998c3ba82cf6b8b91cb0fdd64e049eccb658997573a6249bb904788a'),
-      (448, 6, 7, 32, 20, 'f7d11b004cb98f7bc8bb036a67c9d60552e553146310b5d195b8f1be95460274'),
-      (449, 0, 8, 33, 21, 'df6e53920ab75df11a0f6416024c40077ecd326a5e9b96e37538c826e42a8ec0'),
-      (449, 3, 8, 33, 21, 'fbae5841fd7b8ff933a58d90ffa0102cd5db7b102d405569ce48229360360d45'),
-      (449, 6, 8, 33, 21, 'fc2743a342ed8ad3a959069f629c0b2071625d9a5d843261c099e9bdf9149ffa'),
-      (450, 0, 3, 34, 22, 'fc0185febaea983531365692c48eb2d79fe7628161aac93f092d3110ab961d55'),
-      (451, 0, 4, 35, 23, 'b42c0ad49507cbca60f04a44e1f028f5a785ea51a37bb6b732fe67004d36706b'),
-      (451, 3, 4, 35, 23, 'f74fb8132ab8c27bd95c9b1a88118874c26715ec72b0292357a7a53a61e0155b'),
-      (452, 0, 5, 36, 24, 'b471cf15884b7ba9ffa23e0ff8c022ecac467841d94cb0323ea78fe63011dd0d'),
-      (452, 3, 5, 36, 24, '0d6f0df6e5faa1897c38581b5527706fe8ceb34380b107b2ffdf8f7931a3c142'),
-      (453, 0, 6, 37, 25, 'f2c17cd151a0a09428d3d6f460bdd5c42be72ba80d63b367ccf17d2c6ffcac68'),
-      (453, 3, 6, 37, 25, '7b35940b8d4265aef69c1397fa3df186381ee3bf28731296b989e097a463b283'),
-      (454, 0, 7, 38, 26, 'e730305970eb40218d30247eebb4ce8b62440fdd7b408b63eda002c4c08fe192'),
-      (454, 3, 7, 38, 26, '076f09df1605f9499cea03c70124cfb86bbdc8943396500a118ee3d407c47ec1'),
-      (454, 6, 7, 38, 26, 'f4673e3d26a30e9ac58169286f0319ecc8d6c76af8ac0f9b74ee6232f0393ba9'),
-      (455, 0, 8, 39, 27, 'de7dfee369a42c3aa36aec2b0e301a8e3f0ad0b9d068e4429a4bef5a3ac61acd'),
-      (455, 3, 8, 39, 27, '00efb86d732d510ae56e14e0234a9021d9fe760d921bdb82f5e418abccb29cd7'),
-      (455, 6, 8, 39, 27, 'e22ede5068125c91ab95a5bad931cfcf0c56614d691a6ce10456ee6acc91849f'),
-      (456, 0, 3, 40, 28, '282b31b880b2365f117dec489874de0675eb9c1200762ff132bc1e10a2a89dbe'),
-      (457, 0, 4, 41, 29, 'c972ddca4e8b8fb477d6c2abf98d38a5b60f05599e7b0bdfe84823087d379b37'),
-      (457, 3, 4, 41, 29, 'f9bbc6509bc394047883d08156ab3d1936d1e37313ce3cb22e8ee0a72b9f3dbe'),
-      (458, 0, 5, 42, 30, 'd39f5a82045a500c698a55085b4ebbeed78757e6422fff640b2365d731ca96f7'),
-      (458, 3, 5, 42, 30, 'e40b89692e65520a541bd25802305234a52c4b323c51816ee22dc308b9919fed'),
-      (459, 0, 6, 43, 31, '3b160e63c2c4205d44eae5fc90713b388ed81122f8c4609809c69999cdece727'),
-      (459, 3, 6, 43, 31, '2743cc13dc75dcde4072ed2783b8093a5d5a3bbb20fe0b9dd184435b9728b324'),
-      (460, 0, 7, 44, 32, '7b8802a8e4b98de60b926f863614d54db8e640aa04ab65984b38445116375af5'),
-      (460, 3, 7, 44, 32, 'd30d5e621e5a32e604d166b9eedbb3f45cf5afaa759c93f42ef70c3d56d211c7'),
-      (460, 6, 7, 44, 32, 'ea2a4aca5739ff0f7bb8e1820baab0483706d8b86dc694954a91ef67141e3c1c'),
-      (461, 0, 8, 45, 33, '01bb58fec72703113531e112284e87a1c496681b4af1a357fb7835bcc4071491'),
-      (461, 3, 8, 45, 33, '1d418f35d71d7503fe0692e91453bb211113939bad78c8b2af51df8a02d349a2'),
-      (461, 6, 8, 45, 33, '27f92bc9e0925d1fd867c69b635ee56c2932752313391027ec6743be4ebc7f5c'),
-      (462, 0, 3, 46, 34, '8a3b2905b6de3e58d139a28d8f3ea83c92f5b4fde46999c74eb7b1c21589be51'),
-      (463, 0, 4, 47, 35, '2c53207c24ec80f16c19b91d49a3609dbd6bca08e2e0233f05f907c6f238522c'),
-      (463, 3, 4, 47, 35, 'c3a093d342912d497070b26c4d0875e4343fea184e123cc5e6f65993cd37675c'),
-      (464, 0, 5, 48, 36, 'e45962d2815bbe6cd4607bafb1dce4a77b0550d2d860da4546f8e4aade6da29d'),
-      (464, 3, 5, 48, 36, '24ef0e618ba4bb48500eda4e57ea5dd9fb7e551eb5313fc08952112984f58ed0'),
-      (465, 0, 6, 49, 37, '7a5bab9c1d2563d282ed60be90a00ec01026fe7f31c58157605b27290653f7b0'),
-      (465, 3, 6, 49, 37, '67cad62333880cbc4ebba8506684723c88a9605cf6069336a817f9bd4fcb189a'),
-      (466, 0, 7, 50, 38, 'ca732bd2a416f921e3bf5ad48ca30485903ac88e3deb09b21a60d2fa8adf194e'),
-      (466, 3, 7, 50, 38, '572f6e6a6601b98cd123ea96f55978b8cf1af51211af73d1c1ef853d5b824231'),
-      (466, 6, 7, 50, 38, '22d65b3d9eb91c6ecfeb232eb4fe15ebd0e1a9911453dd46fde1694656f3f82d'),
-      (467, 0, 8, 51, 39, 'da8f010bafd405d097aea6978f84cfaf91b5ffd8abc31bd116d14a34b8c82f7c'),
-      (467, 3, 8, 51, 39, 'eb69aef1bca5bd44a0cadd99f669aaf34be63b272999b663db62e53486d78c8a'),
-      (467, 6, 8, 51, 39, '92889bd423643d164138da4cb3aa8924a8f6d08fab5fe111c1e5262dbe92534e'),
-      (468, 0, 3, 52, 40, '358c43bb86f04c97304fd1efad4532d11c22d3291a50c5405642be87f14ac4ec'),
-      (469, 0, 4, 53, 41, 'b42cf1f6fcb6327a61acc9d2533b9c0201afda6188add38be2bb47608d2aa609'),
-      (469, 3, 4, 53, 41, 'b56dcfe0541cc71b62c1704aafb106804509becaa430ead6765f3a75367efb89'),
-      (470, 0, 5, 54, 42, 'e4764fdfa04fcb3d0384850d74b98934c58d79e2d5c90e8f04473685053abb11'),
-      (470, 3, 5, 54, 42, '6cc630565bd0ff7afc7aebc6923fa820d3bed8d577974fadf8c4d8e39bf350a4'),
-      (471, 0, 6, 55, 43, '112d8f0dbaddfed9d5d710ec55cbff57d1f2563ee4309d67898499391e7a4470'),
-      (471, 3, 6, 55, 43, 'ed92dc1a395c6d8390dd0e9386978a51bbd862960c67ebaf050910855cfdefe9'),
-      (472, 0, 7, 56, 44, '0e86f3ba0a125fc439c3db1b2fad975608bb0803e59bb1159a6217e90cc18e06'),
-      (472, 3, 7, 56, 44, '7cbe4cde997a792b1f6af4d064d39aea4ef116c1a67de6edcb9d98760927cde3'),
-      (472, 6, 7, 56, 44, '6413330f5f6cec4e21fb8a66b389b8679832506c570194af0b60bbce96a1cfd3'),
-      (473, 0, 8, 57, 45, '38b8efc2eac5343d2feeb985a37e3a5a32668a341eba073dcd538e8abd96b22b'),
-      (473, 3, 8, 57, 45, 'b68da6711a8366c674ba5e3906cb8d5a3dd30e3994cc49792f2a778da84edd31'),
-      (473, 6, 8, 57, 45, '7f459bfcbe8483ecc8c9bb9c11333cdde6ad3aaa525b016e8279226e53081728'),
-      (474, 0, 3, 58, 46, '5b4dfba09a45a274c8b97b6e7c4c29e88e51819528b7f97983f07d9eee59d6a1'),
-      (475, 0, 4, 59, 47, 'a1021c2feda1fa808bd4f8b1d1c63626505e0049eacc861e5e2373afdbaae528'),
-      (475, 3, 4, 59, 47, 'c7979406a4cd45f71340137514b76d6362009b427330db47dd8c5b107b5252c0'),
-      (476, 0, 5, 60, 48, 'f8d4de0309e2d5e6673fd1133ebabcaa44b5951432a36045502a1bf05a8313db'),
-      (476, 3, 5, 60, 48, '29e13a79983feda979cd6b8b302b6fa0ceda9519477ca3884ed0a5f037b3f3ba'),
-      (477, 0, 6, 61, 49, 'e779f82ad05709d5fff9b1f690f2b57159ace8d3c32271d9fa15db252662bda4'),
-      (477, 3, 6, 61, 49, '1a3a3ff77589cdb6c42518c3e1ca042aaa6bd58617ee94c28bda527c2a7fd86e'),
-      (478, 0, 7, 62, 50, 'e70b0d6e4810b2bf7b4ab7c169cf5438df7c8ddf1c3c329719322cc5f9b9be75'),
-      (478, 3, 7, 62, 50, 'd2a5ad79e1bd1f0544396aaafe1be1f05fcc46bc402a8feb1afc509e13bdad36'),
-      (478, 6, 7, 62, 50, 'cc264d4d5f12560f3c6f4d5e3c09010d88742287fdd526ba9fb287eb1f82cbc0'),
-      (479, 0, 8, 63, 51, '0a567b0591931410ee009634644c39b80d9a60303d11c7a4114989660085abeb'),
-      (479, 3, 8, 63, 51, '7b005d54dce7a5ce805a9fe96688d920804218053f4e3c56d31e86106f49cf16'),
-      (479, 6, 8, 63, 51, 'dc42b001ed8cd7760de194a252fa0897803c38961f7d6a5f60082feeeb3fb445'),
-      (480, 0, 3, 24, 20, '3f29217ae36b7bc9d8a7d65a08f6b18ea848b1d34c9539bdba7b75643691f8de'),
-      (481, 0, 4, 25, 21, '30aa87a5a8fb4da8d340e627699d0006df997283a6595d9c3dc52dd3de89a7f1'),
-      (481, 3, 4, 25, 21, '5894705303427225f8251a6ae52eedac9351759ec0b58606a83ae12153bfe6c5'),
-      (482, 0, 5, 26, 22, '5d449f98676c0dffbf870252eec32fbb01bbef469af8aee4f8b1033aa30b3bed'),
-      (482, 3, 5, 26, 22, '81f54b10b2ffcb14928546ef1834a9027be1ec881f99d55a377a4e94e0128faf'),
-      (483, 0, 6, 27, 23, 'dd13cc19d37e73768abd908c96bcc50b0bbec8ef2784372780abf98c75ffe777'),
-      (483, 3, 6, 27, 23, 'aade6935f885df1d1a253a346a13c6f38c9c5b06918cc883e3d47f8f5fcc853c'),
-      (484, 0, 7, 28, 24, 'dc483e294b96e23901b5ec015146638542c3c22f7e61de157d2cded50be66ee7'),
-      (484, 3, 7, 28, 24, '5e9d388dfb1b7a63796fe36dd35dbd86bf836796e97572a90ff788c908826506'),
-      (484, 6, 7, 28, 24, '80f3d183e93065fd54fcef4b31b745ff3200b3cd9d0217ec5b98f898b8a9b674'),
-      (485, 0, 8, 29, 25, 'd1f4b2ff27fa084da96b770f9a0c6d8aa0dd5465bf04fb55de11cf675689134d'),
-      (485, 3, 8, 29, 25, 'db929ce57ca6dcf280dd57b7185e82d7b4f5de8cc99d83f9eaebee76746b196b'),
-      (485, 6, 8, 29, 25, '90c6ac03bc1616020da874a72ca5f1154f78f61a1927636018e8d18d0d76ecb6'),
-      (486, 0, 3, 30, 26, '210d785f9018815c141ad98ed6c11a3397068c65cb9f1e3d0032908f29c0d9c2'),
-      (487, 0, 4, 31, 27, '04d8a92d8e058d674fe891544a695c98f537668474b8a8658401dcd29bacd877'),
-      (487, 3, 4, 31, 27, '5dad82f9781ff46af2e33adbb6a80f1a9f92ccd68042e205c03155b30d6176a6'),
-      (488, 0, 5, 32, 28, '04fcbf862391e7c653737e86ad35b3a8225f330e146686e2ea8c24ffec3c2cbf'),
-      (488, 3, 5, 32, 28, '72702af12b4e8fd6a56bb9d2f62942553fe4899ca42af5c12ede796580a4c015'),
-      (489, 0, 6, 33, 29, '9ab8908ee098ecc9290b659b566320bd480eeddeb7fb27b0c22d87568d80b28a'),
-      (489, 3, 6, 33, 29, 'ab43098e0c1952c3892e5ec480b0c3b6baf57bfbc67b6878b6e64db77f6b2498'),
-      (490, 0, 7, 34, 30, 'e9d517834235d351f6efb33ff99e1d724f70f365531982ecae00927be0f11e2e'),
-      (490, 3, 7, 34, 30, 'd8e29dfaf980fc2f64f533f8f61708a7048be15dcc10d5f80a7827ce54d6fcf6'),
-      (490, 6, 7, 34, 30, 'fbb66cf7c276e171418f30641fb25aca1f169e584f72002009feb5439190a985'),
-      (491, 0, 8, 35, 31, '3c9a486aade0be45361eb00a933f00f553fba02fbf0f688e0a59448f0d988d1e'),
-      (491, 3, 8, 35, 31, 'f5fea4490c08892892530bcdc48a047e49be4ef43b5e5ad6a68c09cb218b2607'),
-      (491, 6, 8, 35, 31, '807f2645967640b9d690b8822ceb02c3ca55de3dce8b65c259cb1a24a560365a'),
-      (492, 0, 3, 36, 32, 'abbe4e7f675b4972c0f20a228276981068d6adf588d5502b95fbca8d5ec14661'),
-      (493, 0, 4, 37, 33, '59097e01fc2714a0d7e0deed5e17fbc2e1c9ffb2c2e5d62c3f58f32fe7ea27c8'),
-      (493, 3, 4, 37, 33, '8e6f7693a084aa028100f9778c6f78c8e72ed4bc167c357491cf0c5bbe87d3f9'),
-      (494, 0, 5, 38, 34, 'd80a91b2d0f4b7735b10eb820d1adeae0f4921167651f60a483c6e3fe21f1133'),
-      (494, 3, 5, 38, 34, '40e3b61ae94eff3a51c59136f7810510015aaf545d534c7a87e531f94c669116'),
-      (495, 0, 6, 39, 35, '1e774a8105bde9c360e923cb9a9369bd45361701b12092b1426e3e39965a0d0e'),
-      (495, 3, 6, 39, 35, '32bb839479a9222323655990c56b9fe6486d8ae4db565fc1bbf333ee93056225'),
-      (496, 0, 7, 40, 36, '247a0990ccf0c0bcda4a8639346afd91a51f9394c721be383ca8e85cc8990723'),
-      (496, 3, 7, 40, 36, 'd39d750ab288c8311989ff814f8cbe2a0f0c913008f2b8a5fbe12b500ab0bfbb'),
-      (496, 6, 7, 40, 36, 'c663432ee3b27a4525b73016bdaff314af793d801c61e8f2ca7ff10fb2cba313'),
-      (497, 0, 8, 41, 37, 'a51bace1e65013ac3b4b18650d63e73475af4524a7905ed14a8e709671ef3fc2'),
-      (497, 3, 8, 41, 37, '27a0bbcd564699819ca50998cb41b990c37db9d2fcb2ea3fb8c3c54249902dfb'),
-      (497, 6, 8, 41, 37, '12e79db6281558cbbc277c8736951c6e4548e1c1d6eeb10161bc51410008e570'),
-      (498, 0, 3, 42, 38, '9e1184aa26c700511ac6aebaadfdef0e966eb4e970755140abfab8b730d25080'),
-      (499, 0, 4, 43, 39, 'c08acc5e986682b989ae5dbff411c05cb697952fc96966a83e5e6beb1c3ced3c'),
-      (499, 3, 4, 43, 39, '30670f0f3b3e033429a399eb5963a4dd9f0d1deec413641bf18fb82b0801b16e'),
-    ],
-    149174: [
-      (0, 0, 3, 24, 20, '15cb244e5ca506f594525ebbeba8ad706838dae22ee2f8875d46ddf5f32e5066'),
-      (1, 0, 4, 25, 21, '40882abd82a2eed29515e499ede195220ce1be43d1fc1a05eca5026f6b3f0c60'),
-      (1, 3, 4, 25, 21, '4e34bc63f5bcd4e10c4009a78693bef40e957e94fa7ef4128703b3c91fc8e2ba'),
-      (2, 0, 5, 26, 22, '6f89b647124bee921d70c2446fba33a7c8aec44d59dddc7a89c902c32bfe40f5'),
-      (2, 3, 5, 26, 22, '9ea5bb585345b9ea106323bfb52fb894188d3e53816cb7c2b768d2b1b81023de'),
-      (3, 0, 6, 27, 23, '810a2f7ceee9b88806f1e755a9256f861ca7f234cc704147d27299c739ba6576'),
-      (3, 3, 6, 27, 23, '488c04b903ad3c88f5448a5d4024229e099c05dd9c0fd90170e027259c8be8bd'),
-      (4, 0, 7, 28, 24, 'cf030a04523a2469274d5d159793f73247af8dff78356f1e74008e05e0fcdb92'),
-      (4, 3, 7, 28, 24, '93e1b83bd1cd4db8a9249bfca02ba64df6e64e36a145a8430a5f9febc61aa440'),
-      (4, 6, 7, 28, 24, '766ece225deaa43360637991d4a44b2dd68d949093f547d5dccbdab1ad6e4d11'),
-      (5, 0, 8, 29, 25, '35c02fbbdc86c87b70546cd08f41ff7e4071c176f7f417a25ad9ab8394a04420'),
-      (5, 3, 8, 29, 25, 'e83cb5a92834ddba9c5c0d64ebe620ce3fd23329aae181bcc9a3b386d1f3aa1b'),
-      (5, 6, 8, 29, 25, 'a2d8c5100b4ba9f9e9f32816990ab5cf6785874e3fa2d2663f8ed39446b49aa9'),
-      (6, 0, 3, 30, 26, '7dcdcc80047724b8633ac44b5328408e78c3d81c02e997e0adc716d3da66bd12'),
-      (7, 0, 4, 31, 27, '59ce02e89c91a4e75439ac739f4c4aabfe6260f285adc4971cd334e0cea630e3'),
-      (7, 3, 4, 31, 27, '95c381a73af50cb21f2431f556253485dccd7b7f0c289834a915d1f4b134ee86'),
-      (8, 0, 5, 32, 28, '07f113a2f61079300ae25d85b189aa8dda4eb492e9d780076c4671700f4f9d37'),
-      (8, 3, 5, 32, 28, 'a1619f2a8f1c417f8318b0968e3b52ad087023e3bf50547d9659d5db920a4e1e'),
-      (9, 0, 6, 33, 29, '074f1b2570524c541c5157cc7a6611be6cdf6ad0d51737097df09394a756b332'),
-      (9, 3, 6, 33, 29, '3fb34fc4da7d2780e85a9c86c70369fc9df90dac2906d08d7bb428791995bd65'),
-      (10, 0, 7, 34, 30, '0f1129726b69221b9ab31d15043f03b8436e181df7abe7b5adf86da17560be13'),
-      (10, 3, 7, 34, 30, 'f02da92007b25db60280a89fe01ef133e8bd14c9a52c531ad3226dfabb25424e'),
-      (10, 6, 7, 34, 30, '6c3f0ed0d3d87e34e9e64143ee01a434ea25d2eeceaf21c2581e8890830fbbaf'),
-      (11, 0, 8, 35, 31, '76b56d77971227646b5ba5bb1796f4a0e695868721817dc28b3af91ddc67d9e2'),
-      (11, 3, 8, 35, 31, '3e9f6a8503e1a7ef8259422032e7a7866508eeb20ae1c79d7d47421aa233c67c'),
-      (11, 6, 8, 35, 31, '315def84280db80e8954650f276764b470e64883b51671c4e8f9d5dd983264b7'),
-      (12, 0, 3, 36, 32, '0923eb824025defb53421f38d2cfa73f08d447660c6fc2c5430b46729b92598e'),
-      (13, 0, 4, 37, 33, '3d5ce98149bbeab3f909b792e73894783d4a92df73f99fb1e2e3817891210201'),
-      (13, 3, 4, 37, 33, '725c0c4c9bf5e6a8c1f020fd441511849603d6d77983fc29e87ed14b1876eb41'),
-      (14, 0, 5, 38, 34, '088c8386e162b219122c5ed2d4ca6601b0196f053b6ab7fcaa45d125cea7c527'),
-      (14, 3, 5, 38, 34, '6b46765149d88230e9d90dc7d8e63d1a15bd78ec948329ec460e71140f9489f1'),
-      (15, 0, 6, 39, 35, '83872d37e4264f46f1fc9c62cdcf0b60a6e0f1a8a5d0d12fb6bdebd70c7b37ca'),
-      (15, 3, 6, 39, 35, '005ec4686bf70d35df6f023a7320094d2db9ae1753860d74e37f284a608408da'),
-      (16, 0, 7, 40, 36, '8e6fb1c9fb30baa5c102977e5b28b13233bb71ae6249e7c1607cacf4426afec8'),
-      (16, 3, 7, 40, 36, '64fffc00f650ac3b022666f278d380016cc2206362d778c2234b226374f958a9'),
-      (16, 6, 7, 40, 36, 'cac07be6bfec001e8e006a12b83f3fd35b60ce30192049aa58cdad1a8050601f'),
-      (17, 0, 8, 41, 37, '0f8645156f5765ed78f5e79cd1ae075120f163de313f3a8a91d3aae4defa13eb'),
-      (17, 3, 8, 41, 37, '4fb96fc0983a6f523930e8e8d3e9273238419dd7d5ba6fd94e7aa2cb6b80d1b7'),
-      (17, 6, 8, 41, 37, 'de20a990de8fe5f5d1918821ba26712a7368455f4091c5114a47166281fa9ea4'),
-      (18, 0, 3, 42, 38, 'c690a04a7ddf7266ccb63fa613b4b5fe2e000a4ec8700cb0762122515dfff5a9'),
-      (19, 0, 4, 43, 39, '3bff7f0b89aad58fbf13ee0af80d0e0b092f617515dfb0e730b2d237e1f95408'),
-      (19, 3, 4, 43, 39, '3ff1126fa116dacf83dc646ef7c71772b1b8c63ef36382adab44490e176a35e6'),
-      (20, 0, 5, 44, 40, 'aaea76b72e5e437828f769997f027e2f35755a4016b6811aa79cc589b0826f8a'),
-      (20, 3, 5, 44, 40, 'e7fe9a203111d680f8bb2b7eb9b65830b856162f6d7919cc1e6fc6bbbc652c7f'),
-      (21, 0, 6, 45, 41, '87449e970b6109cce2b6aec5a77ddf21d1d2e16e311865a9a05b04ec9adf5446'),
-      (21, 3, 6, 45, 41, '57cff1c8ccd08205837fb2771095cc0671ef152544ddbfe94a5dec8000b03cd2'),
-      (22, 0, 7, 46, 42, '43bed403d7f7ced3ab6b50cf222cb440e789b30a984c4a05053a60db8c1fb0bc'),
-      (22, 3, 7, 46, 42, '8a4a5a1e34273279043c3db1177cbf684f33ddebb88d78201b6b4b847cfb314a'),
-      (22, 6, 7, 46, 42, '7e1fae67357a9d13fb6b1233b79ee46b2695c1f9f968a7d80985edb505516a94'),
-      (23, 0, 8, 47, 43, '78017d39900dfd2f61abb1150f091e615465076fe8faf0b750abc6c308c88ea4'),
-      (23, 3, 8, 47, 43, '70a70264df6b23a32a68a009f062d8c4f3fea395282ba5cd6ced82c9251108f9'),
-      (23, 6, 8, 47, 43, '2823870f4db49ec19204766c1c961708badd4f1bb5deca7f59f5abb9b995bce3'),
-      (24, 0, 3, 48, 44, '71a7b8305156b99e1b7ede2a8e7b574a3312fafc8e8ffa61f866110f2003ce5a'),
-      (25, 0, 4, 49, 45, 'e53dd47810a63fc2716c6e0a40fd4fb111eb4bc0160212327255ec19f16d0086'),
-      (25, 3, 4, 49, 45, '163017d333b5fb45fb5d4eaff7d32b589e62eacb22bfdc4c1a535f1f4b3921fe'),
-      (26, 0, 5, 50, 46, '969fe1ecf61a385455bdcbf74ac0b316512629c1eae2ec49b8322c3c2710594d'),
-      (26, 3, 5, 50, 46, '968fd3e2fabbe45600f655f4f61656be7514cec86adbe12e17490f4ef2596a08'),
-      (27, 0, 6, 51, 47, 'b48c0831814cfd719adf5c5fb53c4da40c94e55700d422998e0bdff327147f6d'),
-      (27, 3, 6, 51, 47, '9562a7931f4f0cb3461813cbe42ef8ec604a63db71a9ebf3e2169bd285256837'),
-      (28, 0, 7, 52, 48, 'cd4c54fcd003a59181a37219a0252f4fdad5ee22f5ce0f3d7b94ef5399758aa3'),
-      (28, 3, 7, 52, 48, '42165d55a8a4db95a83980e9abb0e7319df85f212ed69201429a1d02b2b2435e'),
-      (28, 6, 7, 52, 48, 'fdce814159433aa9bbd51a71c5233dd34bfebbb594c151f13b7fbe97911d777a'),
-      (29, 0, 8, 53, 49, '3f491ad498a5dcf232a8abc96fb32fb9319f48f0e9898f26c36e34ebc69cdfa5'),
-      (29, 3, 8, 53, 49, '0518c1cd5b2d340feeb8d9f9909cf01c86f7c95c297d1a6f2d1878d5f52b6b85'),
-      (29, 6, 8, 53, 49, '22a0b23e4b84977371a4bb2e1d1202bf1d48921514345bb9fe6926049838c56c'),
-      (30, 0, 3, 54, 50, '8411a6e6758d91d9dd735e6bf477d1f8ff3dff265c93aa8b9b05c5ef06a0f202'),
-      (31, 0, 4, 55, 51, '2fbfecd6f8021cbb6f27cca3a184f77c103fd3ddfe9aa0242fb3d42bce5c3630'),
-      (31, 3, 4, 55, 51, 'd22007679dc09ef4f5380c04bd7d1f9c58b468231d8eb2561e69ecb0d67be800'),
-      (32, 0, 5, 56, 20, 'b7c2be55d13c9205e1265c62d5b04ded15d11ed6f575af586d9864127714040f'),
-      (32, 3, 5, 56, 20, 'a4ebfb3763f0cc783676fe2b0fc3f00428eb40b6811cdccedefb3e650f07f52e'),
-      (33, 0, 6, 57, 21, '75a51091b5eebe12b16732cae1bbd20b2a30a98a9f1ad4d2f03f2ed06be87a96'),
-      (33, 3, 6, 57, 21, '14d7d0896778c2ff0902e3c97072f4ecba0a0bbe04c7857fed3b70550786db9d'),
-      (34, 0, 7, 58, 22, '3901aa2e46f07e0cf981030a8fa06e57d8bbfcaf38ec87f3c81c67cda4937d78'),
-      (34, 3, 7, 58, 22, '5f328af7a3bd5f58dc0de0cacc1efbd9416cad4087732e655bdf6ac8cb87b6a3'),
-      (34, 6, 7, 58, 22, '98ddc32434bc13b09dd59fddbc502780bdb8f2914a8e0d438f1916d0d12a058a'),
-      (35, 0, 8, 59, 23, '656a67bb593697ff70b2fbc509ac673bcb830657f6b4dde5041fa06773f80e47'),
-      (35, 3, 8, 59, 23, '177bc6d21c675e8eab6632232646dc982613d3da1f9e7bb40696f7e786e0422b'),
-      (35, 6, 8, 59, 23, 'fc5c850b1650e203de3aec898c91ea2f1b473faab30b7208acdd184f02ecd921'),
-      (36, 0, 3, 60, 24, '539bc820371c598d88f8c97953487fd2ddd81fa7a1902f72615aa53b101baaa2'),
-      (37, 0, 4, 61, 25, '58a385e729475c4febc528b7651d49df8bb59ec40cf483e3bf2b8a2699698176'),
-      (37, 3, 4, 61, 25, '338b1099745ae8d4df4983c9e7d11651ec57a76c4fea3f02c2a4db630b90b77e'),
-      (38, 0, 5, 62, 26, 'ac927108f564f6ac8de4ad709669f56bc83f5301b124977f4dc18c0ea08cbd69'),
-      (38, 3, 5, 62, 26, '16efd1fbfb32346eb3a8fac00b2ec535a1fbe9eb7c0b70146300d804ea785541'),
-      (39, 0, 6, 63, 27, 'ff5a4dd5862ca99d9376dd0e8f9b654ef91a3cce24f426281395bb63b890c0d1'),
-      (39, 3, 6, 63, 27, '92b0db1dd5e876b6cc8c1037da13dbe4ace155d7ea69902164b13a808866495f'),
-      (40, 0, 7, 24, 28, '6052784d8314eb69730026ca4d447389b3f712c14cf95b697f06797cc660e97c'),
-      (40, 3, 7, 24, 28, '9e2bf78821425f9c67e1278c34d6d77c74c38848139b2b5ed1fcae5ffcfde0eb'),
-      (40, 6, 7, 24, 28, '9756ab1732d8fb8c0cc5d47d8536092fc6a781a87449a32436d7636bafa60323'),
-      (41, 0, 8, 25, 29, '1c34cb13fa5f927d678ae8e03f3fc517f80b79f388147cbef5dcf754f1983b11'),
-      (41, 3, 8, 25, 29, 'bdd92b8d95c266a800bcfb89ad59461193e1fd8d0d9ab6ec14fcdc80be3664ec'),
-      (41, 6, 8, 25, 29, '4a7fa88fa538ed871c7f9f223dba75ce1c79d27c1f5a458bbaf36b7bfea53dd8'),
-      (42, 0, 3, 26, 30, 'a70861ce66582417065f5b8058577f98871aa73d4c4088cf1a760b9b3fdfe531'),
-      (43, 0, 4, 27, 31, '86f75fdc95238157f2210e4d201f8c549ad74fa4fc51f2952e35c41479d745f2'),
-      (43, 3, 4, 27, 31, '597783d90ade3162c4aa4da144816ddf4197ac39546ac0aad1eb14b699b86dbd'),
-      (44, 0, 5, 28, 32, '2f1dabb0c278dffe9c035e8a38f82ce857f2d5c7e205cb23d01d3b58481c11a7'),
-      (44, 3, 5, 28, 32, '074c28bf5144d115758315e65478476615082a68afa749b24178209aef23b4ff'),
-      (45, 0, 6, 29, 33, 'bb8ee8f698b99f0dbfe15917c0228307ab54035c7f558eb79dca869040fea7d7'),
-      (45, 3, 6, 29, 33, 'a0003299898b67d32e27045f1dcf763f6a649b06868e605b40867116b1249896'),
-      (46, 0, 7, 30, 34, 'ab86e75013b5d7887b3f842fde8ef319339ed00084f680007ad88100ca5fee2c'),
-      (46, 3, 7, 30, 34, '10b5f8ad578ee7a40bb6cdc8043c17e8110cf05907102d8bdf21181bba9ae576'),
-      (46, 6, 7, 30, 34, '6d8aa707b10f775d531d22612e0f5d751e12a6f9427af97e70b79d272fb41b4b'),
-      (47, 0, 8, 31, 35, '8b8ec239347c801ac84530f0fa42dae7e474cda04360c1e24a218fe7e3e531c1'),
-      (47, 3, 8, 31, 35, '6b12580d2c93faa96d8d4815f53d1166306eeb733709117a59bb40cd2c595ff6'),
-      (47, 6, 8, 31, 35, '156e93e6e2f48a1eb1889b753ddeb20b8e62b939748bf3a6c3043a0621f8ab3b'),
-      (48, 0, 3, 32, 36, 'f78fecfdb11e5fd7d1728750b36e351ed069776fd699d3c9a809a07c0648a55e'),
-      (49, 0, 4, 33, 37, 'd59d9eefe8d564c6c84e6015d8d1304de1945062a3374e243347519e969631f7'),
-      (49, 3, 4, 33, 37, 'f527d345157de8c304e080e3cabb5dbf9e2a3d59d834a6ed94d1e18a4b3ff35b'),
-      (50, 0, 5, 34, 38, '0a3ddde2c932ad02ddcd5e0fd6eb47cee181a54c0c31ae7a1112d06470c3d373'),
-      (50, 3, 5, 34, 38, '47ed7f1c84a512a2dca0df98e0a0e7c7c0c04c885050306e79e29593ea310d88'),
-      (51, 0, 6, 35, 39, 'a0ad2a16cd27e3ed9ae6d16e180059328c74c10e0ac5a4f08f91fcfc967f8fa9'),
-      (51, 3, 6, 35, 39, '73aa2a782822f4ad904aa08f0ef72ae2be9e1e83a76fe98d091f142e38d902e4'),
-      (52, 0, 7, 36, 40, 'fa9e8d7f72c200245fb911f404c5b7a28416371af99ac6282bcfea76f2b4b61b'),
-      (52, 3, 7, 36, 40, '5101246490a46832213598ed6fc37abbf3b36cc8ce646bfe8c42b53a9f101c39'),
-      (52, 6, 7, 36, 40, '1a6d6cd0e1b7eb3fbc8c40aea802dfea711afcec2a641e0eb57ba51f3597f8ae'),
-      (53, 0, 8, 37, 41, '53883b7e09ee37f9c54ea412b8e7f09817a6e89e42278e013a0f4af5bdca5a14'),
-      (53, 3, 8, 37, 41, '140c2f2f69ae3db97ab5010d7f5a3655a236d391c6aee4ee2a85d5650612d2e4'),
-      (53, 6, 8, 37, 41, '30c21004219f16830a8dbb1ac45a1d969b1bead8ed518631fd889a355bf23e02'),
-      (54, 0, 3, 38, 42, '9d1bf61ef91ae382b409ad8166b9d9abcdcc566e461af8b2459ebb634fdb1c35'),
-      (55, 0, 4, 39, 43, '9d9b56cfa50bdb84d6599e9f95fdf46b3306e114d9ae5ccd099fd8f0acbd45b7'),
-      (55, 3, 4, 39, 43, '052f876df609b4ffc6d7907cc9753c66305b4af3c3c07a2eba4d16b136e52a5d'),
-      (56, 0, 5, 40, 44, 'd2a264eb36fd274da2848fd3fcfee2832dfa3eeb50e7755099a76b6ed4fe9be3'),
-      (56, 3, 5, 40, 44, '76675681d07cc12354122846d4fefb5e2273a206bd2fe89d5890aacee4c8e121'),
-      (57, 0, 6, 41, 45, '01851ad769c611c9b27cabd184b338e27890184f4a7a307d81b65fc559451266'),
-      (57, 3, 6, 41, 45, '7d74692451133e37e08b621bdf4e967c3fd021eefef5ebe3888ba0fcee467b1c'),
-      (58, 0, 7, 42, 46, 'fd4331f8c4ace8698a63d9a6f83acac99ed5eb4009a75dacc49ad01ef6e174b2'),
-      (58, 3, 7, 42, 46, '008fbb9f53a3d9a77cf52c6fb5a5c52270fd5e1085f6ca33c408df4bd2fb195d'),
-      (58, 6, 7, 42, 46, '8d137bfd351bc55b37e306f8c38d5481b5239c5e3efbf54346d6d7a57955fa7a'),
-      (59, 0, 8, 43, 47, '26bc27dfa69b19853222fb9b8546dc5b498cbfd7680431f1f0627c3802d710a7'),
-      (59, 3, 8, 43, 47, '22888e26916ad693a9f110cf462697497c1d3d7b60166da4f4d31b04ae84685a'),
-      (59, 6, 8, 43, 47, '4c98a51cbc86acbfa8be91ec8f12369f83d8de8490a8adadb437475b76f5c0a7'),
-      (60, 0, 3, 44, 48, 'a570700b7954c91ec7c256d7bc0c0f0ca03ed345a4d01d18b000a1747a66186e'),
-      (61, 0, 4, 45, 49, '0f2ddb6d75dd5025f2c4c1005c9f9f57d01c28c7460bf8bdf2259134f4f75485'),
-      (61, 3, 4, 45, 49, '7af2d71b0bed4a8ec4696571602c9a7f7c6a8a132231b438d27578d7fdd34fd9'),
-      (62, 0, 5, 46, 50, 'df338f2a5af61ebfd4f4503fc7344d47bfc50489ffcc420e1d2c2cc1f89ce176'),
-      (62, 3, 5, 46, 50, '13bfb9a0d83813ecddaef742c866be9b282b3a7ca2d7398c5e6bdb73bb3db1c2'),
-      (63, 0, 6, 47, 51, 'f1795665608928c5dc0370fa4368272944698124c31ef9bd21590d3f05dff2b9'),
-      (63, 3, 6, 47, 51, '317bfa4cee988774ebe5345a4bf1a26771a4ead1189ccada7f2a5a0f5df59f79'),
-      (64, 0, 7, 48, 20, '1b656362e04f237b9a9487281ba3bd6b8cb5fb262ac67da90dcdfa580bad8031'),
-      (64, 3, 7, 48, 20, '7fc29c59881d64efe530cf80f6aca0de1eb475892231013e2c9b3a1d70e84c23'),
-      (64, 6, 7, 48, 20, 'd3776c34fa3b7c0c5d27171794a916f876236ab71ef79cdf64c119bd83b5d4a5'),
-      (65, 0, 8, 49, 21, 'f9d69a970d8943f52a2d31de4291be81447cbb96a641c60125afc9f07e0797d1'),
-      (65, 3, 8, 49, 21, 'ae439da0e1cffc28168202cdac9ccc2edee90d303397c82a31f89f88b64d1a0c'),
-      (65, 6, 8, 49, 21, '148f659841aeb5a90e121371c137cc09c277b180abf18674529b935c1c35c4d9'),
-      (66, 0, 3, 50, 22, '58716471ba25df8f3cdce265affeaace58387218acbeeaaf7165add3dfdc1bc8'),
-      (67, 0, 4, 51, 23, '66ff7dbb02d4417ff6beb58276cd36bbdffc27f557b155f6b4d3c454103a35da'),
-      (67, 3, 4, 51, 23, '4e029de56c6d8967c8cacf18094bd2d8011fa480a008984e8685818cd914099a'),
-      (68, 0, 5, 52, 24, '5807db611e665d6a28f09e0a3c00b781cdde0ff30a3c49fe312a59246682826c'),
-      (68, 3, 5, 52, 24, '97eb39a179570da45f3b84144342432fc899da03a1d10f037e2ff0cf6b0b6bbf'),
-      (69, 0, 6, 53, 25, 'a246880c5a7111b02032c5af8e44b3b5e74fdf8269e2721ab68892f19b02d28d'),
-      (69, 3, 6, 53, 25, 'b08f76ac073a0ffad19c7889fdb79d55dac32fad1e5429678778c489eb92540c'),
-      (70, 0, 7, 54, 26, 'f1223cfc4503d6036af53dadbe1c5fb44c0649346d38c67a0ba9b4bbdc3c48fa'),
-      (70, 3, 7, 54, 26, '84a11692f9e5fcdc086dcbf2fb3c35f41b90aa2c0647c855a315e102b34e1353'),
-      (70, 6, 7, 54, 26, '60b292eadc9ce1bd6afc5bacfccf8050d3028c4f77ccc7aadff1cde2d31a25b6'),
-      (71, 0, 8, 55, 27, 'aad8340bb61932cdeecf69307100b220745ee476c942bd3ab235de773bbacba1'),
-      (71, 3, 8, 55, 27, 'd523ed244fc0334e5fc57e94c31c39d1b6838ea8b920a1b77ce2e518cc270950'),
-      (71, 6, 8, 55, 27, 'bfcefae624dcfe19339ed453ac6f41fe32d2a09774658c776b3a705009d234de'),
-      (72, 0, 3, 56, 28, '2445bc455130f0c84a9cc35292c293b5c9c8a1711ca53352d741e9e61f4e727d'),
-      (73, 0, 4, 57, 29, '3022e40d3afa4c606c1d5490e16bc6450ad0a5fe4ac3618ba45bb2a6a676f2b5'),
-      (73, 3, 4, 57, 29, '3e4e32efe6e83b595a7c6fd337e997bbd5f5c41e838ae1f0218d84fab14e7a2f'),
-      (74, 0, 5, 58, 30, '6eb6dae0eb7c1a063e80a3d173e13c8db868feef560cafe1a529d37584e96f5f'),
-      (74, 3, 5, 58, 30, '1283c4b4e205ee853d3288dae9b296ed3cc33993497ed69fee38f24fcbb61c64'),
-      (75, 0, 6, 59, 31, '2b02e1d701a37ad64e0d2e1838e243544f62cc3a67afdfb3a282e4ddee035ffa'),
-      (75, 3, 6, 59, 31, 'b231d47088bea1bd8274c305ccaf69c2a84b8cde0dfbfc3073567bfe8bd418e1'),
-      (76, 0, 7, 60, 32, '3baf300d40e467cda35da567be5a153c98be2528792d61878a3d75810d293367'),
-      (76, 3, 7, 60, 32, 'aea02eda11278b4dac02043e3fd8eb323c8b4decaa9dd70423535c892cab0cc9'),
-      (76, 6, 7, 60, 32, 'c3802caa9a57d889a0ff1d2caee7a845e6345b7424fb847e68c107e1346c97ec'),
-      (77, 0, 8, 61, 33, '4e623d69c6e383abcfe478756ca6152679f8e2863c1bed36855f33e929fb038b'),
-      (77, 3, 8, 61, 33, '3929b21f3400a5252d177c40c81fdad442e5ac2bb2339dcc42faefc970740f33'),
-      (77, 6, 8, 61, 33, 'ab7f2f5830c65511e10b561d4f07cea55361012b8044ad206e8a17073b52dac2'),
-      (78, 0, 3, 62, 34, '153f034b9bc9249ee7278900395e38d335539fab70091f0cf5b773570564e0a3'),
-      (79, 0, 4, 63, 35, 'd0a2aa5fa3df4adca90fe61e454d812def74ee216e97b2319a17de8340af9fcc'),
-      (79, 3, 4, 63, 35, '3572f7323cc61287121da5dd9b359b72a3eb55a9e3fd4d2ffa5d0c71d44323a7'),
-      (80, 0, 5, 24, 36, 'a3c5f7f7f382cc97797b3f97e6d91deb90c373791254b5c8b42d8d17e74e0898'),
-      (80, 3, 5, 24, 36, 'b917cd4e1cd4c7e94fb4bf9d81e0314188b5690977decfc645e079e1e0d7cd8a'),
-      (81, 0, 6, 25, 37, '49775fe67e0c38c40d530c1b813f0cf0cc3865a4593ce6ed75780cee7b5e0b09'),
-      (81, 3, 6, 25, 37, 'dc30ff6cf6abda6f7c424f594a563cca23d4df06dd62bbf78f75b1f020e14eb2'),
-      (82, 0, 7, 26, 38, '69059cd182beb31c63ba9a7954fd1dfdc0c90415d50ec56b0beba3d81572a732'),
-      (82, 3, 7, 26, 38, '69f79a67f5a3b0988328395d15e7a6ed6e7a33689bcc02d8e1411f3d1599ed67'),
-      (82, 6, 7, 26, 38, '1133d6cb08cd4fc510746b9c9ccee18b84ec491f9fdd346d2222be2a2af2d6b0'),
-      (83, 0, 8, 27, 39, '719efd8f25a522dac5507811d8d498040e8353f4e487e73d9c6a7f8359a98641'),
-      (83, 3, 8, 27, 39, '92015524d2ef3ddc22e5a71b05792aea5cab79fcda356910859f6f97749c5b20'),
-      (83, 6, 8, 27, 39, 'ee2b3cc7bb21cf5f0f93b70ec123ae0cf19ab3a0d7f7e29a4f388bddfbd73b74'),
-      (84, 0, 3, 28, 40, '1c24855d760e862ba115ded6df11aacc21d975fa3f5cb37f39f57c9be7aeaeb1'),
-      (85, 0, 4, 29, 41, 'a541f4483d9265a4152ae4439eb1a5445ca55c400865a42094815072e27bec7f'),
-      (85, 3, 4, 29, 41, '1975541bcc14e0b3cb85563b0be918467702972498f43f4965363897c934b651'),
-      (86, 0, 5, 30, 42, 'c1d9b6e3a720bd3867773684e04722e37b21ec89761dfd644d34c39251520031'),
-      (86, 3, 5, 30, 42, 'f2b29fa44ace8a3158a668a90f809e62386ee2a60f8d0b06135019148f7e60eb'),
-      (87, 0, 6, 31, 43, '27da4a7cd2554e747616a71cb3c1f4827ebbf227edaa91a10aa7bcc425e5f872'),
-      (87, 3, 6, 31, 43, 'ee8e3e197304d6286327c99d1640982c6b88a82dea399a7e6b090870cf45c827'),
-      (88, 0, 7, 32, 44, '1311296ab9f451f6a520a00fae862fb4cdba3480282038ce97b5024d9302c6ca'),
-      (88, 3, 7, 32, 44, 'a1f81ff8443089b51ffdeddf48bd8dfef70938bd39cbb373363c2227c959dec1'),
-      (88, 6, 7, 32, 44, '5b6f576bb187b027460b404bfb14de1dfdb2bb436b4d63ec0e5634e7ff912db2'),
-      (89, 0, 8, 33, 45, 'ffa1d5878c7f551adbab0b5a243c0e328f0e99a6b55c8ac027296383aa42f4e9'),
-      (89, 3, 8, 33, 45, '28773377b3ab74b427ffb07f00c305780dabf0cc88acc609d77c151dd3bfedbc'),
-      (89, 6, 8, 33, 45, 'a4b0097d98fd1a0a33a572bca067d51cf62babc84590cf367080007af5692e59'),
-      (90, 0, 3, 34, 46, '9c1304a7db30c84a6ac3980d2593dd7e4df5362158134b1889d5a4fb2076a159'),
-      (91, 0, 4, 35, 47, 'f1e509c524012964884b23421a7bba713555ac32fd6d91fdce4632448a27c2ea'),
-      (91, 3, 4, 35, 47, '715b6a314d207fd8ac93ec456676848f1e9b2aa151561d2135f89e3c2bd17bf7'),
-      (92, 0, 5, 36, 48, 'd0444f34aee6137071ca5102309f8bab66e5456b7c3545a5739d0b578769279e'),
-      (92, 3, 5, 36, 48, '8f3de45c1fef0df396dac53841cc2beac0eb18cc604e14cdb9452ecbd0390a34'),
-      (93, 0, 6, 37, 49, 'd1483256967aa4eca9aa67266e3e734a071680a733b69451bd7e3089f348e8a4'),
-      (93, 3, 6, 37, 49, 'ab9e29259066ec1a492cbeae01de652124573450013f48a2c13c32be9b6960a6'),
-      (94, 0, 7, 38, 50, 'c20cb1408807f2f943b4e1c519702b387e15da1c71ff470ed7062af1a6d39c51'),
-      (94, 3, 7, 38, 50, '6a779278f1fee1dacaf571356146f1b16f8ce052ec55d9d8f00cd2a8177d7577'),
-      (94, 6, 7, 38, 50, '33e24d69338fd289522dd4bd157eb265b5b1829d3b6bfede3aba7dcd082fea0a'),
-      (95, 0, 8, 39, 51, '8e942e1e63258eee1041ce5357ae6034a027d128e57d8fe87527d9e397410b4a'),
-      (95, 3, 8, 39, 51, '35b0854ebc3153b652f605afbbad29a1793d90ae24ca417b87fb04836a081d34'),
-      (95, 6, 8, 39, 51, '4175af847fc3c2a1a618f81ebd6a4e8815dc6594e33a53dd44a1a0bba2eefa20'),
-      (96, 0, 3, 40, 20, 'aad55d05a4fc8989ddf3dbe7c4c020c4a038bc555838b9521b2ea4724ab44520'),
-      (97, 0, 4, 41, 21, '102033d5d4024894ed87989a00aeb41d978bb8e9e1a3db74543d107e2d1aad36'),
-      (97, 3, 4, 41, 21, '7767c006a50e58ffca1a747ed04b994c867a6d76c264be8eb25f3484fe383d6c'),
-      (98, 0, 5, 42, 22, 'e69b5f9b1b91cae97611173ffc72c2f2ddbdfe787a4377b558bc27e501ca513c'),
-      (98, 3, 5, 42, 22, '6fb8646745246e5450ddc8e7007a93a1d33ae5a14fd31cc5d6741757e2814e4e'),
-      (99, 0, 6, 43, 23, '9c6b8d443f736f5864ce2d37216cc0a23a610f8a3284fe5e3b8a9524f3ed5344'),
-      (99, 3, 6, 43, 23, '25dd254916e0c3ca9fa1a770ed7e39c938e41495c3421ea929ffb697b25b51c3'),
-      (100, 0, 7, 44, 24, 'dd471b7ca44d9851018309e22137f9af67c2b8c88b33e98b5052b366825f7142'),
-      (100, 3, 7, 44, 24, 'a2c7ccb023d48f0290960be7b480df05398eb59fc547186936af14e9652157c6'),
-      (100, 6, 7, 44, 24, '309c16df8a85f96048dd44433e8bd4e7960ffa0ccd0ef92b24d653be311d6621'),
-      (101, 0, 8, 45, 25, 'ba8284e7ee267f0a8c9089db435adaa745abc0514f8640dcf80571da516a1d5b'),
-      (101, 3, 8, 45, 25, '414c0970d3fcf91b527960be219573b980745d7961c3594590dc370bcb9599d6'),
-      (101, 6, 8, 45, 25, '8380c4671a2e519c2b1e006d00f94274e5dc52235c107e7d2c287b34808da8bf'),
-      (102, 0, 3, 46, 26, 'fc4ab5f1224e99d105728ea429291425e12e155798c6a805d49d06d1cb7910a0'),
-      (103, 0, 4, 47, 27, '39db9278845d82c714735201e0f423801200cb65e6ff8129439c09cb5581623e'),
-      (103, 3, 4, 47, 27, '8832527dc1ad4991de05f107fde54308d2c7b8fc7c647b9bafcc58ec24ce0bbe'),
-      (104, 0, 5, 48, 28, '9db1c33592a0b3ceb90c81599846877b73ed4b37094d0857a411912630255e08'),
-      (104, 3, 5, 48, 28, '4a869e13b22bef25e735c2f965b264b5350fc24ee220b759270b4bff68b75f29'),
-      (105, 0, 6, 49, 29, 'bd48c0eb9eea5a5a3fadf3b5a3ec7afc7159a13d244c3ab4b617693a63d0d6b4'),
-      (105, 3, 6, 49, 29, 'd219166d7f23a0304acfc09c41f042f2f42439c51b023a5d38b720397b05b868'),
-      (106, 0, 7, 50, 30, '42aef6b2f0704cc9a73f3c7ef31d4b3c8741715e2628773ef551db82fde22b30'),
-      (106, 3, 7, 50, 30, '78456389972c5f5782a7c0c7264c003689c0e6c8397c760d9cc17ca9c6eff6c5'),
-      (106, 6, 7, 50, 30, 'c358be20b9f057772a1fbc8e82167091a0e95390188e7a0e87a1a5dc80558b72'),
-      (107, 0, 8, 51, 31, '8747bd67ec1609e0bc3e20862e249be95db207507d7cfa906f43efc108ef2ff0'),
-      (107, 3, 8, 51, 31, 'de7d62cc1f2d0d7a2afab72567730fb30c99bc79ad7437c39592a654d4d643b3'),
-      (107, 6, 8, 51, 31, '6134080532853f9caef2680080f6cd3b86eef1ed8e090e49322a0cecb9c4786c'),
-      (108, 0, 3, 52, 32, '62a1731e9e92e3e5835329dc8eaef60aed5352b484be83141417a545a44baa57'),
-      (109, 0, 4, 53, 33, 'bed3389ad23bc5e5c78e071b9df31f47d6ddcef57409d308ffe0476818593e33'),
-      (109, 3, 4, 53, 33, '7eb371b31dc92cd1ce5687ebd01c509cabeb6e9633a2dfa7e073f1411e15e30b'),
-      (110, 0, 5, 54, 34, 'c1cefc980a6e0da91b769ecc698354032338abe329535df3c5921eee41f92a93'),
-      (110, 3, 5, 54, 34, '20ca64ee5d22e79d5b88276459834c10522befd345e3adf6ac3757e55b6358a5'),
-      (111, 0, 6, 55, 35, '99e448a557b046abe60500cdaa69272a3db25b9f5b03bc12a6e0c1e520e14bb6'),
-      (111, 3, 6, 55, 35, '83e5bd8770c71f45bab387a3ea3dbf9b59bd90fa8bb4450fe519a6b89f2d55eb'),
-      (112, 0, 7, 56, 36, '7534e82a8439cfda4450d46739f9d703e3be99e150078a9e864a5f99dc4f0e1a'),
-      (112, 3, 7, 56, 36, '5306fa70268b730fe1e4900a6fb1f4984944100fc11db08a60316e90c44c12a6'),
-      (112, 6, 7, 56, 36, 'fa8ea4ea6f86aa2c784ebfb7beb12b3bb7a7a66d2e20a2b90fe9a0732474e309'),
-      (113, 0, 8, 57, 37, 'e92f2bb19c9d862269b5336f4ea7865c39331e252e38fdc7772421ea38964571'),
-      (113, 3, 8, 57, 37, 'ea6a120371e13e716bf54cf555d2ec4f79043fe803199bf88a3ad5227e2f562b'),
-      (113, 6, 8, 57, 37, 'b03ddfb42ac494709cf82c0adff5e8c8ff11a165623906d9b515011d70d26a02'),
-      (114, 0, 3, 58, 38, '70b3e0ccd15d32db29c39106e91d09d5b261f53de84d15791ae992e63effa176'),
-      (115, 0, 4, 59, 39, '3c594f8c328d7d1175da5ae771f0224c615f0e39a54d6d09372fd17ff8a7aaea'),
-      (115, 3, 4, 59, 39, 'bb474e3ffe02763ff5d363f4e933c030e299593375419b0bb01191e53ef11397'),
-      (116, 0, 5, 60, 40, '10138db618f7503075915c9e535d6bf051e00b03c4fab5e27350d701df935de1'),
-      (116, 3, 5, 60, 40, '1ce4cf5cd66765ee17d0295f92d497725b550c8b81eee0bc158dae2b427c9f1b'),
-      (117, 0, 6, 61, 41, 'e7082913f0aba84436da44f6ab33711ad5c30dfe95ebad948bb0ab4284777a00'),
-      (117, 3, 6, 61, 41, '82862844d6f8e1c6851a2a8869c0e3f64f91ef5b01961dd72b64fe9edffb2e08'),
-      (118, 0, 7, 62, 42, '880b33b60dd625a8578fdec7f8907887599051694278c6b56be2956ca93065c3'),
-      (118, 3, 7, 62, 42, '0fdd1968e6696c19ab0ce86eacaa56776fbd0f941f4798024b84368ae19a339a'),
-      (118, 6, 7, 62, 42, '870d7784e4445fd4e703b661c81f4c8616b07d7ce069756c433e0cb9c311aca7'),
-      (119, 0, 8, 63, 43, '738b2c1839f8caff573a2b943cfc4c2055022dfffe2ca14b1e4bf1fc59713501'),
-      (119, 3, 8, 63, 43, '12a5f84edcaab2684fa3fcc2b0d1bf640d39ac6c2cd31fe4d5cef9a13c8677ca'),
-      (119, 6, 8, 63, 43, '8ed8a981b976975104127a9cd0a22002a4a2df9f581667e614760031ec4f770f'),
-      (120, 0, 3, 24, 44, '63ed01a03d8f6f2c7e0214ed30a839f2c8748058ecda9a8bd8fe3b0eeca283cd'),
-      (121, 0, 4, 25, 45, '08c1116c3e336d26c253d395b6bf50a705d9cf95df61b4a6ff31ba7f13ec3bd2'),
-      (121, 3, 4, 25, 45, 'd9c7bc9ae15c0c7c87643620ad1ff06fd6ff7608c08160a81eaa2f17b19832e9'),
-      (122, 0, 5, 26, 46, '82625ad4e03039605ca2c55d27297507e1591992962a6782f5a7c207f6862e78'),
-      (122, 3, 5, 26, 46, '9eef7d71f874bcf6b73dbe2fa2b9c50b01a302a7bdec049f69e63a13fc29aaa4'),
-      (123, 0, 6, 27, 47, 'ea4eaa71bfe75b63edeb4409eb779fdbcc1938ab9b8b13582e80e0d66bedfcdb'),
-      (123, 3, 6, 27, 47, '64844f4a0b05c415cee91e765677176015a2191e13626ef0c673754f5da08019'),
-      (124, 0, 7, 28, 48, 'ec884c1f16e51533b6cbf28cf2a53f5ef32802227eead68c35af0cc7bb9a2d3f'),
-      (124, 3, 7, 28, 48, '891c19d6bbae00bb3b9203d53d321567ce1052743cf3933939bfd7d47698bde8'),
-      (124, 6, 7, 28, 48, 'cf7536481456c3bbbca3d405e9f45f4f24f71838bf4f0550c0ecf07d189b80e7'),
-      (125, 0, 8, 29, 49, 'f0c452e2980047e84cefe5720acbb7b4628723124c401863858e9112124199db'),
-      (125, 3, 8, 29, 49, 'bf92c5331d23b581bc0b6294c05582a0f8a9d8f5fcf7784c7638664c51294a25'),
-      (125, 6, 8, 29, 49, 'c8bf969b1cfcfab2b1ccb9430866e1bb9a4e8a387dcf8562c236627242732f1b'),
-      (126, 0, 3, 30, 50, '6aac3e228e5c0a307184642e58a2ed892995770c6a94ac94c4504d5ff2bfc6a2'),
-      (127, 0, 4, 31, 51, 'e00e351be33c8ac39d58a954e06059c53ee124dc60f473d1a138ce45cee845dd'),
-      (127, 3, 4, 31, 51, '4b3d7c0f66efb42fde587645df8631a3d0e160c26a1c4ebe2010cfc7661a5357'),
-      (128, 0, 5, 32, 20, '5a55bd501fbacafb179a3d20b1c55f5e1f22745ee2a98314cf83bcd17dc144f9'),
-      (128, 3, 5, 32, 20, '4cc70acf998c3ba82cf6b8b91cb0fdd64e049eccb658997573a6249bb904788a'),
-      (129, 0, 6, 33, 21, 'df6e53920ab75df11a0f6416024c40077ecd326a5e9b96e37538c826e42a8ec0'),
-      (129, 3, 6, 33, 21, 'fbae5841fd7b8ff933a58d90ffa0102cd5db7b102d405569ce48229360360d45'),
-      (130, 0, 7, 34, 22, 'fc0185febaea983531365692c48eb2d79fe7628161aac93f092d3110ab961d55'),
-      (130, 3, 7, 34, 22, '42249030ada4a4a0511a340b412826daedc5571c98f7ed99ec12a491d9a6ce9e'),
-      (130, 6, 7, 34, 22, '329503d46ea4939a1371c1d885752b8ff34b2d9b9b7bab480890ae1dcc85a647'),
-      (131, 0, 8, 35, 23, 'b42c0ad49507cbca60f04a44e1f028f5a785ea51a37bb6b732fe67004d36706b'),
-      (131, 3, 8, 35, 23, 'f74fb8132ab8c27bd95c9b1a88118874c26715ec72b0292357a7a53a61e0155b'),
-      (131, 6, 8, 35, 23, '14159e53a9437ad2eca72170f172a97d2566d9983927157e9cce2854e5ac542a'),
-      (132, 0, 3, 36, 24, 'b471cf15884b7ba9ffa23e0ff8c022ecac467841d94cb0323ea78fe63011dd0d'),
-      (133, 0, 4, 37, 25, 'f2c17cd151a0a09428d3d6f460bdd5c42be72ba80d63b367ccf17d2c6ffcac68'),
-      (133, 3, 4, 37, 25, '7b35940b8d4265aef69c1397fa3df186381ee3bf28731296b989e097a463b283'),
-      (134, 0, 5, 38, 26, 'e730305970eb40218d30247eebb4ce8b62440fdd7b408b63eda002c4c08fe192'),
-      (134, 3, 5, 38, 26, '076f09df1605f9499cea03c70124cfb86bbdc8943396500a118ee3d407c47ec1'),
-      (135, 0, 6, 39, 27, 'de7dfee369a42c3aa36aec2b0e301a8e3f0ad0b9d068e4429a4bef5a3ac61acd'),
-      (135, 3, 6, 39, 27, '00efb86d732d510ae56e14e0234a9021d9fe760d921bdb82f5e418abccb29cd7'),
-      (136, 0, 7, 40, 28, '282b31b880b2365f117dec489874de0675eb9c1200762ff132bc1e10a2a89dbe'),
-      (136, 3, 7, 40, 28, '20b67913489c9dea16ce7e82fc8c719fda109e4fa1dff3c44344b3a48cba3a18'),
-      (136, 6, 7, 40, 28, 'cead9fa4242c009dbd057d82881c17f94d024fbc5a0ca70484d40a552c7b7c88'),
-      (137, 0, 8, 41, 29, 'c972ddca4e8b8fb477d6c2abf98d38a5b60f05599e7b0bdfe84823087d379b37'),
-      (137, 3, 8, 41, 29, 'f9bbc6509bc394047883d08156ab3d1936d1e37313ce3cb22e8ee0a72b9f3dbe'),
-      (137, 6, 8, 41, 29, '30d199a7c61decccec5f03b0f83fb3966395ab4c842c543e2389f981be171daa'),
-      (138, 0, 3, 42, 30, 'd39f5a82045a500c698a55085b4ebbeed78757e6422fff640b2365d731ca96f7'),
-      (139, 0, 4, 43, 31, '3b160e63c2c4205d44eae5fc90713b388ed81122f8c4609809c69999cdece727'),
-      (139, 3, 4, 43, 31, '2743cc13dc75dcde4072ed2783b8093a5d5a3bbb20fe0b9dd184435b9728b324'),
-      (140, 0, 5, 44, 32, '7b8802a8e4b98de60b926f863614d54db8e640aa04ab65984b38445116375af5'),
-      (140, 3, 5, 44, 32, 'd30d5e621e5a32e604d166b9eedbb3f45cf5afaa759c93f42ef70c3d56d211c7'),
-      (141, 0, 6, 45, 33, '01bb58fec72703113531e112284e87a1c496681b4af1a357fb7835bcc4071491'),
-      (141, 3, 6, 45, 33, '1d418f35d71d7503fe0692e91453bb211113939bad78c8b2af51df8a02d349a2'),
-      (142, 0, 7, 46, 34, '8a3b2905b6de3e58d139a28d8f3ea83c92f5b4fde46999c74eb7b1c21589be51'),
-      (142, 3, 7, 46, 34, '57d3776ed8fdb823bcc9da96af1233ef7121ef88dbca081b3b839f10f87354fa'),
-      (142, 6, 7, 46, 34, '8100e20308a598f1d806d339dede83ed751bf06569fc02bf910ce1c9389938b2'),
-      (143, 0, 8, 47, 35, '2c53207c24ec80f16c19b91d49a3609dbd6bca08e2e0233f05f907c6f238522c'),
-      (143, 3, 8, 47, 35, 'c3a093d342912d497070b26c4d0875e4343fea184e123cc5e6f65993cd37675c'),
-      (143, 6, 8, 47, 35, '96d2a0e76c2a09d6c15d0be054542b3da4ae39fc936a0d62fb84b4ecb9828ef5'),
-      (144, 0, 3, 48, 36, 'e45962d2815bbe6cd4607bafb1dce4a77b0550d2d860da4546f8e4aade6da29d'),
-      (145, 0, 4, 49, 37, '7a5bab9c1d2563d282ed60be90a00ec01026fe7f31c58157605b27290653f7b0'),
-      (145, 3, 4, 49, 37, '67cad62333880cbc4ebba8506684723c88a9605cf6069336a817f9bd4fcb189a'),
-      (146, 0, 5, 50, 38, 'ca732bd2a416f921e3bf5ad48ca30485903ac88e3deb09b21a60d2fa8adf194e'),
-      (146, 3, 5, 50, 38, '572f6e6a6601b98cd123ea96f55978b8cf1af51211af73d1c1ef853d5b824231'),
-      (147, 0, 6, 51, 39, 'da8f010bafd405d097aea6978f84cfaf91b5ffd8abc31bd116d14a34b8c82f7c'),
-      (147, 3, 6, 51, 39, 'eb69aef1bca5bd44a0cadd99f669aaf34be63b272999b663db62e53486d78c8a'),
-      (148, 0, 7, 52, 40, '358c43bb86f04c97304fd1efad4532d11c22d3291a50c5405642be87f14ac4ec'),
-      (148, 3, 7, 52, 40, '61caf421a0a95905785940e9bbcf8f05195db499d873d84facfae30ac0ff3581'),
-      (148, 6, 7, 52, 40, '693753d919cdaaf0dc44f8c28702368a5476929651ad89d00423157c6351bac5'),
-      (149, 0, 8, 53, 41, 'b42cf1f6fcb6327a61acc9d2533b9c0201afda6188add38be2bb47608d2aa609'),
-      (149, 3, 8, 53, 41, 'b56dcfe0541cc71b62c1704aafb106804509becaa430ead6765f3a75367efb89'),
-      (149, 6, 8, 53, 41, 'cb90cd3a40bea9286b564d2f4b3fff659d2ca8b45b02ee685868d37b3de1b864'),
-      (150, 0, 3, 54, 42, 'e4764fdfa04fcb3d0384850d74b98934c58d79e2d5c90e8f04473685053abb11'),
-      (151, 0, 4, 55, 43, '112d8f0dbaddfed9d5d710ec55cbff57d1f2563ee4309d67898499391e7a4470'),
-      (151, 3, 4, 55, 43, 'ed92dc1a395c6d8390dd0e9386978a51bbd862960c67ebaf050910855cfdefe9'),
-      (152, 0, 5, 56, 44, '0e86f3ba0a125fc439c3db1b2fad975608bb0803e59bb1159a6217e90cc18e06'),
-      (152, 3, 5, 56, 44, '7cbe4cde997a792b1f6af4d064d39aea4ef116c1a67de6edcb9d98760927cde3'),
-      (153, 0, 6, 57, 45, '38b8efc2eac5343d2feeb985a37e3a5a32668a341eba073dcd538e8abd96b22b'),
-      (153, 3, 6, 57, 45, 'b68da6711a8366c674ba5e3906cb8d5a3dd30e3994cc49792f2a778da84edd31'),
-      (154, 0, 7, 58, 46, '5b4dfba09a45a274c8b97b6e7c4c29e88e51819528b7f97983f07d9eee59d6a1'),
-      (154, 3, 7, 58, 46, 'fdc52a06043b36ac747bcb3d1a6bc2ef4f536e5f1e20408c20fc0b89ff90c81f'),
-      (154, 6, 7, 58, 46, '6fad94a1af0ce460ed225cafa8523670619f77804eaa0ce7cb39b309a6bbb9f7'),
-      (155, 0, 8, 59, 47, 'a1021c2feda1fa808bd4f8b1d1c63626505e0049eacc861e5e2373afdbaae528'),
-      (155, 3, 8, 59, 47, 'c7979406a4cd45f71340137514b76d6362009b427330db47dd8c5b107b5252c0'),
-      (155, 6, 8, 59, 47, '09ad45ddc0d5875bc931b0d947f96d9d042ce079ffb84ab81dad81f6c0fa6bc0'),
-      (156, 0, 3, 60, 48, 'f8d4de0309e2d5e6673fd1133ebabcaa44b5951432a36045502a1bf05a8313db'),
-      (157, 0, 4, 61, 49, 'e779f82ad05709d5fff9b1f690f2b57159ace8d3c32271d9fa15db252662bda4'),
-      (157, 3, 4, 61, 49, '1a3a3ff77589cdb6c42518c3e1ca042aaa6bd58617ee94c28bda527c2a7fd86e'),
-      (158, 0, 5, 62, 50, 'e70b0d6e4810b2bf7b4ab7c169cf5438df7c8ddf1c3c329719322cc5f9b9be75'),
-      (158, 3, 5, 62, 50, 'd2a5ad79e1bd1f0544396aaafe1be1f05fcc46bc402a8feb1afc509e13bdad36'),
-      (159, 0, 6, 63, 51, '0a567b0591931410ee009634644c39b80d9a60303d11c7a4114989660085abeb'),
-      (159, 3, 6, 63, 51, '7b005d54dce7a5ce805a9fe96688d920804218053f4e3c56d31e86106f49cf16'),
-      (160, 0, 7, 24, 20, '3f29217ae36b7bc9d8a7d65a08f6b18ea848b1d34c9539bdba7b75643691f8de'),
-      (160, 3, 7, 24, 20, 'b0dfc33b6c45aa16b99e11b01e5a5725eae54d105ed44ed8e3e3b92bf7b10e49'),
-      (160, 6, 7, 24, 20, '020e4b4f1e759f1032db4a189b642b1acd7948a70f4c3257fce8395b1bf611d2'),
-      (161, 0, 8, 25, 21, '30aa87a5a8fb4da8d340e627699d0006df997283a6595d9c3dc52dd3de89a7f1'),
-      (161, 3, 8, 25, 21, '5894705303427225f8251a6ae52eedac9351759ec0b58606a83ae12153bfe6c5'),
-      (161, 6, 8, 25, 21, 'e768ef309ba23273d0cedebfb4bf2441fdc4cdfbdfcf5694d31173177509b9e7'),
-      (162, 0, 3, 26, 22, '5d449f98676c0dffbf870252eec32fbb01bbef469af8aee4f8b1033aa30b3bed'),
-      (163, 0, 4, 27, 23, 'dd13cc19d37e73768abd908c96bcc50b0bbec8ef2784372780abf98c75ffe777'),
-      (163, 3, 4, 27, 23, 'aade6935f885df1d1a253a346a13c6f38c9c5b06918cc883e3d47f8f5fcc853c'),
-      (164, 0, 5, 28, 24, 'dc483e294b96e23901b5ec015146638542c3c22f7e61de157d2cded50be66ee7'),
-      (164, 3, 5, 28, 24, '5e9d388dfb1b7a63796fe36dd35dbd86bf836796e97572a90ff788c908826506'),
-      (165, 0, 6, 29, 25, 'd1f4b2ff27fa084da96b770f9a0c6d8aa0dd5465bf04fb55de11cf675689134d'),
-      (165, 3, 6, 29, 25, 'db929ce57ca6dcf280dd57b7185e82d7b4f5de8cc99d83f9eaebee76746b196b'),
-      (166, 0, 7, 30, 26, '210d785f9018815c141ad98ed6c11a3397068c65cb9f1e3d0032908f29c0d9c2'),
-      (166, 3, 7, 30, 26, '0a8434daf0b02206a61974209d1af930d74e65346443f14470cb6b53655a6c72'),
-      (166, 6, 7, 30, 26, '130b473660def079ebe1e50f76073c916d4c02a44a47cd43f6bbcb814e5e762b'),
-      (167, 0, 8, 31, 27, '04d8a92d8e058d674fe891544a695c98f537668474b8a8658401dcd29bacd877'),
-      (167, 3, 8, 31, 27, '5dad82f9781ff46af2e33adbb6a80f1a9f92ccd68042e205c03155b30d6176a6'),
-      (167, 6, 8, 31, 27, '9a0d83c32eb3b2cb5bb616ae248bf9eabe5e7df2edebc6a389682e4b92254d69'),
-      (168, 0, 3, 32, 28, '04fcbf862391e7c653737e86ad35b3a8225f330e146686e2ea8c24ffec3c2cbf'),
-      (169, 0, 4, 33, 29, '9ab8908ee098ecc9290b659b566320bd480eeddeb7fb27b0c22d87568d80b28a'),
-      (169, 3, 4, 33, 29, 'ab43098e0c1952c3892e5ec480b0c3b6baf57bfbc67b6878b6e64db77f6b2498'),
-      (170, 0, 5, 34, 30, 'e9d517834235d351f6efb33ff99e1d724f70f365531982ecae00927be0f11e2e'),
-      (170, 3, 5, 34, 30, 'd8e29dfaf980fc2f64f533f8f61708a7048be15dcc10d5f80a7827ce54d6fcf6'),
-      (171, 0, 6, 35, 31, '3c9a486aade0be45361eb00a933f00f553fba02fbf0f688e0a59448f0d988d1e'),
-      (171, 3, 6, 35, 31, 'f5fea4490c08892892530bcdc48a047e49be4ef43b5e5ad6a68c09cb218b2607'),
-      (172, 0, 7, 36, 32, 'abbe4e7f675b4972c0f20a228276981068d6adf588d5502b95fbca8d5ec14661'),
-      (172, 3, 7, 36, 32, 'a2e606d8a91cc0cb813d86019887aaeddf159c7694b1b5109b2599cecf243198'),
-      (172, 6, 7, 36, 32, '8178f45698952cea49bb00b40d9f575b1086436451a990273f9a40eef5f7dd24'),
-      (173, 0, 8, 37, 33, '59097e01fc2714a0d7e0deed5e17fbc2e1c9ffb2c2e5d62c3f58f32fe7ea27c8'),
-      (173, 3, 8, 37, 33, '8e6f7693a084aa028100f9778c6f78c8e72ed4bc167c357491cf0c5bbe87d3f9'),
-      (173, 6, 8, 37, 33, '9d210203b075192531777a6a699d3563166a76fcad52822ff8f7eed9156b84d6'),
-      (174, 0, 3, 38, 34, 'd80a91b2d0f4b7735b10eb820d1adeae0f4921167651f60a483c6e3fe21f1133'),
-      (175, 0, 4, 39, 35, '1e774a8105bde9c360e923cb9a9369bd45361701b12092b1426e3e39965a0d0e'),
-      (175, 3, 4, 39, 35, '32bb839479a9222323655990c56b9fe6486d8ae4db565fc1bbf333ee93056225'),
-      (176, 0, 5, 40, 36, '247a0990ccf0c0bcda4a8639346afd91a51f9394c721be383ca8e85cc8990723'),
-      (176, 3, 5, 40, 36, 'd39d750ab288c8311989ff814f8cbe2a0f0c913008f2b8a5fbe12b500ab0bfbb'),
-      (177, 0, 6, 41, 37, 'a51bace1e65013ac3b4b18650d63e73475af4524a7905ed14a8e709671ef3fc2'),
-      (177, 3, 6, 41, 37, '27a0bbcd564699819ca50998cb41b990c37db9d2fcb2ea3fb8c3c54249902dfb'),
-      (178, 0, 7, 42, 38, '9e1184aa26c700511ac6aebaadfdef0e966eb4e970755140abfab8b730d25080'),
-      (178, 3, 7, 42, 38, 'dd692a965bc623031c3c9155a4510290ba26e819e2513e7286e443ef5cce03a7'),
-      (178, 6, 7, 42, 38, '93d4bb8a0e3588d06e232b00802bbbd838f0cc974d34ae33a6896d6f93466d9e'),
-      (179, 0, 8, 43, 39, 'c08acc5e986682b989ae5dbff411c05cb697952fc96966a83e5e6beb1c3ced3c'),
-      (179, 3, 8, 43, 39, '30670f0f3b3e033429a399eb5963a4dd9f0d1deec413641bf18fb82b0801b16e'),
-      (179, 6, 8, 43, 39, '045c40c2220d0ddcb036a9e5dbef31c3be0f5be8bf4ae307d18a90b227018ae7'),
-      (180, 0, 3, 44, 40, '461fbe9323cc64e95a0530ce8c9cd6107ca44afd617b147e8546573dd9aba9e4'),
-      (181, 0, 4, 45, 41, 'c59765a0bbb5790d0d8ade07176fc1ff886bb0306d4fae38ec92c5895da55321'),
-      (181, 3, 4, 45, 41, '7b4a57717d29f64f0f5aed46b6b49eb1811e1143a3d9896c71c94a63f661312c'),
-      (182, 0, 5, 46, 42, 'fda08819492fd99882b74d75480499b175fa25f2b03e1c4c7ce705d94f58483c'),
-      (182, 3, 5, 46, 42, '4da42c1deb6c759ed56f9fd7a094d52521e2f227cd8468ebe92766bb17e49554'),
-      (183, 0, 6, 47, 43, '2c41069758a4e57cceafc68c7fa18f1987983723af41211dbc3fa41231c21819'),
-      (183, 3, 6, 47, 43, 'b7cd8979db65eca18c6d20d8ba24d6e7a7032ed7f2c0e443694ea4a2f5f0fab7'),
-      (184, 0, 7, 48, 44, '1a1c430abe66f2032de5100261496c9be773f340d60f93c55921d6b900169037'),
-      (184, 3, 7, 48, 44, '4d26378b14c69eef407abdaee661b44efb714fca9f2606067b0a9ec2d3f722d6'),
-      (184, 6, 7, 48, 44, 'd600a93d666e20ca2bdeb5d47651d0db80aba9602471e7502555dc7fedccf1ce'),
-      (185, 0, 8, 49, 45, '84c298474a86d7cbc762557d2908735eeb61d4e0cd2b2ad2e98a70de29a06722'),
-      (185, 3, 8, 49, 45, 'd997bf4a5d185144587fa8096bce44883934080d31595ae6a7b91425320b038c'),
-      (185, 6, 8, 49, 45, '1a7f4676f34b59d7de20c5405b4b9c565707cc750adc2c71749ef0b9fcbf56e2'),
-      (186, 0, 3, 50, 46, 'efada1401648b26a8ca47e2bc45f5397b68698760b871eeebd7f906fad2b2bc0'),
-      (187, 0, 4, 51, 47, '7f698d1e39b4bc3b600824c4c3061c915f03e15b75900cd49ee5044c1a5b0b90'),
-      (187, 3, 4, 51, 47, 'd4fe286937b2b141b2c46f163e909c133ee3e1cac75a2d931b03f37593d816ec'),
-      (188, 0, 5, 52, 48, 'a85d058873f5c08bcf2168e7cfd021cb28c8ea0f0315205489efd8bbceceb13b'),
-      (188, 3, 5, 52, 48, '33c325acb43c769b515663d5954939dda63f12768ebae869a5a817dc809d435a'),
-      (189, 0, 6, 53, 49, '1d67f712a8c6b8c8d3df3ef93fc63749528a5a5126b05faa5a903f57fae4ba0a'),
-      (189, 3, 6, 53, 49, '1622129d1c0780e581f1d810ac8ff508b85b6ba26b4201b5e7ab1bd70f27f73c'),
-      (190, 0, 7, 54, 50, '3f5e293527e6ea73c9ee15d745948015c707257f25192fc12b0b1fc859737d11'),
-      (190, 3, 7, 54, 50, '798b8c210f6ac99260cf798a79b237aa254319116e7664700e4ae8c1331e3b3f'),
-      (190, 6, 7, 54, 50, 'e8ad8b68cf658fc4f3d40f536658a9c591ccd14ca59a9d27d511c73b21388176'),
-      (191, 0, 8, 55, 51, 'a9c05193b6603b505e0fc8f3437bd6771fa9bc9b64dfe84a44fcb245f0eec0fb'),
-      (191, 3, 8, 55, 51, '7704e0213116d71d1a67a1cede41c9689e5c1382eebf27e708d418f689f4e512'),
-      (191, 6, 8, 55, 51, 'bfcc64d6ce67d0493954e3732df78573f814b301373dfd0a5f0d789151ff185f'),
-      (192, 0, 3, 56, 20, 'b74d72c4de5504b2656865b961ca74a44790784091c50b844f0518517e831827'),
-      (193, 0, 4, 57, 21, '3d327b35dcd01ad81948e29107bc10c6a469e7b317363692274de137f30a5f21'),
-      (193, 3, 4, 57, 21, '2970d9f5e1d61e048f87221a4ced77100865e3772531b87d70f0142f41764c52'),
-      (194, 0, 5, 58, 22, '8e9ca3b4a6e6ebe661dbdba7e7cb32e0914f895766322018cd9900bf7273dcab'),
-      (194, 3, 5, 58, 22, '79d1ec1987eda8a37da2ce4d1cdf904634fa7fb0d7d3254b9459d31011e3007f'),
-      (195, 0, 6, 59, 23, '9611d91a5bd7f5de48d101452d6c0198b33587004f48e388c6588646bf36e85a'),
-      (195, 3, 6, 59, 23, '5aad4d7a1a9b47567713f7bb09dbbc00510f77b7bbf64e6bfb69ef428a89933b'),
-      (196, 0, 7, 60, 24, '98cb98743ca6517abb18c063e0581575c6b5db9d16a91fa1edaf80cd57f48e9b'),
-      (196, 3, 7, 60, 24, 'bebd655f7dda21d94ef60e6229a57f0b55dcc31faa052e5983fef3b3c9030385'),
-      (196, 6, 7, 60, 24, '8d0a46d01db84dc79c0e634bffca638ec84d5a5c4ee227d66ebbd916a0042f74'),
-      (197, 0, 8, 61, 25, '0266aa9a6eff3de735e76a1719c65f8d0c981217bceec07fd4513dfb3d2b4b20'),
-      (197, 3, 8, 61, 25, '340ebabe0d288305546c5690eb0626eac10e294c5e829a2ac7c3b07fe02c1e56'),
-      (197, 6, 8, 61, 25, 'eb0c96bfb9b7dc7ec5cab510fff9434835f765428db9dd978089e854a905ddff'),
-      (198, 0, 3, 62, 26, '461a5da507f20b27783338424117c77aa5ce4325e599dad469c7f450a0a12d92'),
-      (199, 0, 4, 63, 27, '12e3baa0b6409639bb6cb8211d0262d694337c62a3d9e531c178f35385299af0'),
-      (199, 3, 4, 63, 27, '07b1c63c712784e5bc0f22ab9a489c11b50328a3e8acaf88dfba57046fdf7fe9'),
-      (200, 0, 5, 24, 28, '32114c335d06563c9519edc1c3f09c5a65b5b9efafcd0c8e94bc905e02c7c886'),
-      (200, 3, 5, 24, 28, '1ddbc8c8676e4244b4f2f471a2ea6764ce676c4d5fcc717c3548be900d214eab'),
-      (201, 0, 6, 25, 29, '1e5dca01f86d14e1241c11d87b4b081cb50e113bce61910c886e9454af4aeba2'),
-      (201, 3, 6, 25, 29, '1df9911d4af2246fc658c31807ae7c506a4368de7c5126fb1ec246c5bea035ad'),
-      (202, 0, 7, 26, 30, '48492273118c5a3cec3b81b84df6511fdc643cd2c7f4f460d8afb9dd6166374e'),
-      (202, 3, 7, 26, 30, '90dbf34770aa50d2c9f735c7bbf74e6c77529c361b3ee42e84e7d5a5be1d3984'),
-      (202, 6, 7, 26, 30, '258daf106a622a6ddc0a5600ec2c99c785e642272ba6efdd40d6efe87839cbcc'),
-      (203, 0, 8, 27, 31, 'd39a9d64b508bf3847a48cafcf62482dcdb68e805db3800859bafa95279d1e08'),
-      (203, 3, 8, 27, 31, '3c7886f2bf77b51522a488fb68efb845ee10dcf5e3dc79ac6224294527815cdf'),
-      (203, 6, 8, 27, 31, '5c3c8ad4595a74ccf4d477beccdc6118756916d7110fe7244965be115122d59e'),
-      (204, 0, 3, 28, 32, '281eff1685ec74861c58f62b27bc2e9e9ef8ec82ac0be236724d79c7487a80c2'),
-      (205, 0, 4, 29, 33, 'de9b656e659db88002cb2d08c69a798f85b485dabd41ec4dc6fb273947c97c9a'),
-      (205, 3, 4, 29, 33, 'f62335c31f46e010abda7ad5c3bd4480e9dd319a89eebcf9f5e47c3e8ca9c557'),
-      (206, 0, 5, 30, 34, '86208fe06a760b076d84fd84e82b3542f3d95e411af30878c22311f151d1f157'),
-      (206, 3, 5, 30, 34, '9a038acd1623b21478229c42723948a73285c59d66b7a9973493f180a651a6a2'),
-      (207, 0, 6, 31, 35, '600947caf47af08cf8044ef589a6ac906a1a7a649eff41e3eb0358602bfae96a'),
-      (207, 3, 6, 31, 35, '6659b162a34cecdcc313104a2a56eec35f3cf36f4ca1f91856d185d0e68d5cf6'),
-      (208, 0, 7, 32, 36, 'fced69675d0c8e53875f70bb7db0268f296c0880472c5b5d0f4dcaea88b674f9'),
-      (208, 3, 7, 32, 36, 'cec68177d22a997d54ed3083f8b2d3342c10f581371533fd946fc7299b5f6db7'),
-      (208, 6, 7, 32, 36, 'b6d116bafbc2166508f9d1331f5a561cb8a60880d5d2b575bda279d3410f28dd'),
-      (209, 0, 8, 33, 37, 'e92412b5b74180e01fb902973f06dbecb6642046adf574e5febabc6f3bb09bc4'),
-      (209, 3, 8, 33, 37, '44a34535a88cbca093cbcc428f1a56ca373d3683eae6dcfe13c527dbd74f9079'),
-      (209, 6, 8, 33, 37, '97208e6330cb01691a7b69bed84a16c2f23fe637d635f1149abefbac98e2c7ab'),
-      (210, 0, 3, 34, 38, '3f6059fd003ac459d3311435ce94b8221642a01b67c7633914168b68f7ef2ed1'),
-      (211, 0, 4, 35, 39, '45c244da801c76533a745bed5064efbd9b895c3e00f546e839f38ce9e0ba9077'),
-      (211, 3, 4, 35, 39, '22322d6634444ed693db21b64e612102e2296fd0b0a604e000d40ea9e496024a'),
-      (212, 0, 5, 36, 40, '4de891534533f2f2af14e902eea828e19afdfef504ba6efdea831c444e8ff095'),
-      (212, 3, 5, 36, 40, '80c797aaaf0643465e93aa28abb1e990b5fc5dc3bacde874e28f6fc0ce5e3c1a'),
-      (213, 0, 6, 37, 41, '57636ee70447c57c4bb9f4b7d95827916659927e69fc92be4ac3e023bfeabb0f'),
-      (213, 3, 6, 37, 41, 'cf5be45519ddb34f5003167345e423519ee742c6cd354e8491ab6c4621f141d8'),
-      (214, 0, 7, 38, 42, '3d352e4eb7636d3e61a8f99762927c8e9cf5937ff341727e9f69788d3761866b'),
-      (214, 3, 7, 38, 42, '1c0bf08cf3d3290d9f52462bf1c934b1ae8efbf2e3b4f288c21a86d4d0de8060'),
-      (214, 6, 7, 38, 42, '0be64e13588d6278203c46e685fc15e79e55bb7277e6bd7999ebb3094c6b1988'),
-      (215, 0, 8, 39, 43, '9ed56e3d15a0f5acf0b8fd72979d9168885eec5833827f28cc6aecb293ad0563'),
-      (215, 3, 8, 39, 43, '1094c14bbace0252cc9384f82209f4c184994b99a722bd66585739126048007c'),
-      (215, 6, 8, 39, 43, '5a3d25c7002049eb5997a29ae3470de21635c3de67f72d30b7c79088aa017753'),
-      (216, 0, 3, 40, 44, '5e39b4e1fea451c8c6190bee6bb351a7e646586526ba2c09b42d0e3158e759bd'),
-      (217, 0, 4, 41, 45, '284ae7aee0154210f15de6dfa5131c383be97f04745cda4603e7782b96290952'),
-      (217, 3, 4, 41, 45, '0ab0f5dc4b0bb45ad220dfe371f1a0e00f5225a6ee4d56a7262380fc284ea02b'),
-      (218, 0, 5, 42, 46, '048de10969b9d5633defda606169e86a1c29ab047a0ee210712485dd1c46e3a9'),
-      (218, 3, 5, 42, 46, '2cf650f7bd89b56cf705a4dd185939d36b13ec1ced687e2e230ea11f2340790a'),
-      (219, 0, 6, 43, 47, '88efd6c5b7f855daf18b9c8cdee874b58713ea68c620e1198b80a26989781bed'),
-      (219, 3, 6, 43, 47, 'f06a6b17641108386b8202d6b93f7fa12e5f4df7a66c5f41f756fcdf4adca58a'),
-      (220, 0, 7, 44, 48, '12c4e838be4f95f005ddd88dff0409d961ce49414b0b66a3adb0853e286cb5ad'),
-      (220, 3, 7, 44, 48, '32faef97bb734d2e1ab8aaf89cd46db9451bad894fbb52e69e64fa21fe38e989'),
-      (220, 6, 7, 44, 48, '3c8023cafb8141596e07453d4be5b4f727f53df507342719f53c3a77b367fd9b'),
-      (221, 0, 8, 45, 49, 'cefd73059e88775db28bc84150fe726db6893faa208addce9a35b61dda6e20d2'),
-      (221, 3, 8, 45, 49, '6eadee3ac8bbdfa36a9eefa6f34104e9b42cce1ce8340f95943918a37dd5d86f'),
-      (221, 6, 8, 45, 49, '7676bce847a4a9db5ddc423614e77b1c50127f27f1afa6aa11bd59b2fced9334'),
-      (222, 0, 3, 46, 50, 'c83737bbccb5c85d22e34f92a0843faa7237ec79485696480c040a5e83b666be'),
-      (223, 0, 4, 47, 51, 'bd1e7370056ae7456c8b75fbdf8e2dd8830b622c567eeaf865621153ccb01b9f'),
-      (223, 3, 4, 47, 51, 'aebd5c88ce3cf051d4f757c5d2d021574ac9e101e6374f269b5c4f1486d51e99'),
-      (224, 0, 5, 48, 20, '9fbfc1f63d13d79e496e20890bcd929e6ba6632afdc6565e7b163625d1a28820'),
-      (224, 3, 5, 48, 20, '14e3c3391e0e08111a9e2973be7a8eac82ed95ac385455e33afea969c4f6c94b'),
-      (225, 0, 6, 49, 21, '9f9d0c10b31a6eb5f434794f33bd3f464af2f6792f22378a1eaa65dd4b2e7d97'),
-      (225, 3, 6, 49, 21, '6967a81d589c7acea55b40a20581584018007ba8100e636f1c7f489561590074'),
-      (226, 0, 7, 50, 22, '09b5eb4bf657ba904778b0bd1a77dccd5e3e5cb5c21ab6dff3c10623c641ee83'),
-      (226, 3, 7, 50, 22, 'ec0aeaf93f0dab0f841c2e923ee4aa6373061b720faf943e92233b28db38a9ab'),
-      (226, 6, 7, 50, 22, 'c9f94111c67b1962d7f3780613683b192ae57fff53c5b6ea5f51ba1d2d78e876'),
-      (227, 0, 8, 51, 23, 'adfb557e2e175098ed4001752038a719f8dfbc03fed5b08569bd89ba895ee3ce'),
-      (227, 3, 8, 51, 23, '2f6309e0c514bf1f64884ab12d3ef6bd70d2b6380d935d3b5a33401ba2cf13b4'),
-      (227, 6, 8, 51, 23, '594ef6f4d61c638408afd558e03cadae7ec06120562dbc3969f03d0f59e76064'),
-      (228, 0, 3, 52, 24, 'c8588a1dcb84326ff3b9404a860d5ff0947a41b5bdb2279da6a8027cfc9951ea'),
-      (229, 0, 4, 53, 25, 'b882618fb5030f9f024f7043eb65fa83348569a3c2791fa8c7abe2c893fa2462'),
-      (229, 3, 4, 53, 25, '726908d4c8edc0a7a8b01d461c28ce9ee0178458e941d2940fa119d412934a16'),
-      (230, 0, 5, 54, 26, '7fdfe86a3ed720c9f2b083f58fb47b1d845b566e68a728e31faefdce212ef9d2'),
-      (230, 3, 5, 54, 26, '39a6b1ec5aceeb384afb928d33cbb6c40e768c48a74a457258d8e5c5f35a6135'),
-      (231, 0, 6, 55, 27, 'bae8a93de133b8c63f1dd0384cbc35b91d7906af5822f722bfc4ef9cdd098d9e'),
-      (231, 3, 6, 55, 27, 'ade04a752e643c8b509e173cce8d3921f867371273ba36395e8d2bb4408462d2'),
-      (232, 0, 7, 56, 28, '4b02e531c79a4661790db1fe92bbaae955cc1bc443bde5b94860f7ac120a783d'),
-      (232, 3, 7, 56, 28, 'dc1cf1d5cc37b211d979554581967d1133949a7917ff341a835ef06c76d4676a'),
-      (232, 6, 7, 56, 28, '6daf172652e418827f67997709298d7a6801898ff7d1d15963ef12888f93217a'),
-      (233, 0, 8, 57, 29, 'f5de14eb9fa9e184d8dcfbfb12012d48a385dbe6ab81548439d3c758163d85f8'),
-      (233, 3, 8, 57, 29, 'c073af1dfa5dad50fe384e619f290e68e12aa3e8b65ddb2c537e9e09313e7f17'),
-      (233, 6, 8, 57, 29, 'bb8242a38a2f7cd6d02689165a23736d98622d883f1b3fbb791e9009f3948dc3'),
-      (234, 0, 3, 58, 30, '2a4b6267ca151dd599b84bba51b8271f6baab69458ccbd31a4a18f624a5d285c'),
-      (235, 0, 4, 59, 31, '3c23ead44db8140c9aa7ab59e013701c8eab79bda12b95da52c62332f466fa6d'),
-      (235, 3, 4, 59, 31, '2d321d0c41f32bfe666250fd6f31009a481c2cb7f948aee344b22ae07beb3def'),
-      (236, 0, 5, 60, 32, 'de8a9984ad5b2a5b91a731803b46b4a033abc5f66627e71ff58db973e164aef2'),
-      (236, 3, 5, 60, 32, '01fc79845ae071fd68df0c5707cc51911924445b5f712279fed9d6442fef2fd2'),
-      (237, 0, 6, 61, 33, '72173e0bb67320d6fe3c1f9d673d9bda3b1d0da9c5f265fe831c2b099f12051f'),
-      (237, 3, 6, 61, 33, 'd68aa2752d58110e66788989c1bef8ac272d3b0559b9b343ada66638b1ffcf28'),
-      (238, 0, 7, 62, 34, '0a2ebc439cf5f227bfcd37f0d313e31830423b43c870a1fb94a0c416dcbda372'),
-      (238, 3, 7, 62, 34, 'd35dc7363b36097b635bbf52d6e0b039f5e5c8108168cb1bf64ad5a67f17bdf7'),
-      (238, 6, 7, 62, 34, '8e29986e2e7f99ec57e61ae611f32bc65d1899c0987e5d06607a8161ce9736cf'),
-      (239, 0, 8, 63, 35, 'df292dfd653277a79265886f4ccc1b8c9bd881d35ab4a416fc518b4194dddbb0'),
-      (239, 3, 8, 63, 35, 'abe6f30a07fe8aa8f2b899b087df70955e9d4bd5daa5dd0f4851e63fc19bbb15'),
-      (239, 6, 8, 63, 35, 'f12f08f9e6ae2eede6d29ceef77f6f1a449a816774ac07d8226aa3c2b582a98c'),
-      (240, 0, 3, 24, 36, '07468cf940858c209113e504ad6c4f30ec222a4a02667b77129bec1b05203da3'),
-      (241, 0, 4, 25, 37, 'e17e599dee3c9e1d9b235a5f86c52232e8367570b24370de5bd7ad3010ea5135'),
-      (241, 3, 4, 25, 37, '653a52b51518a8be40d3aa7eb669c4ca5ca9663339007911f6a892d894348869'),
-      (242, 0, 5, 26, 38, '6a6e2059b96239e6e7e56e7e93d2a512385ff5f34c19715b6872a5686bce43bd'),
-      (242, 3, 5, 26, 38, 'd36ef024c2e44c8c133f71afced24e1883cc941eec45a6cbdeed79e1a565a3d5'),
-      (243, 0, 6, 27, 39, '4e6a43ca766d12738e96a2ff36d3c85953d7c5713678df8604e68a6a9c692149'),
-      (243, 3, 6, 27, 39, '76f5394ee4e99a937d36d7c18978e5cd8d93ae486bba8128efa1c7b7d06c3ca1'),
-      (244, 0, 7, 28, 40, '5599b6f8cf2c06e7062d078f2960a0dc8d4027556f370e20baabc7e00137657c'),
-      (244, 3, 7, 28, 40, '4a8745a5968946e6507b821750b633d22b8bcafebb6f27dae9340f585e50f55d'),
-      (244, 6, 7, 28, 40, '899d5d62091084006c2c0e5627c2d08c578d13465bc8b7be5f1f4e548349df49'),
-      (245, 0, 8, 29, 41, 'b8c99a229618c486d694e4a8c900d0a0b949fb864bb4533421d643377e409338'),
-      (245, 3, 8, 29, 41, '7b8fb29fc28d4a0340e180d4f74dda33f948061fd1c67a2b9babbaf4d7135e7d'),
-      (245, 6, 8, 29, 41, 'b97d4fbe665b8834a7f9546585e7092311f30ee8313d3f9ed2427282f91be64f'),
-      (246, 0, 3, 30, 42, '2777cdf2b8a6da2933bd3ba6f5dc36203aec1b64780aadac549c796c925f6737'),
-      (247, 0, 4, 31, 43, '9cfd2e0cebf61530c3cfd275398a66fdf01026ef5bf579a384b390109c13dd19'),
-      (247, 3, 4, 31, 43, '436a223d36b3f98b310a6a16d9957dcb5e862eae5c582e6744b9a19b1c4ee7da'),
-      (248, 0, 5, 32, 44, '48563d18201d338e803d54d2eb4b52673076d2b2ea328dd492dce10253030ec4'),
-      (248, 3, 5, 32, 44, '6302a884f4a39dc9af49880e72d55d2691869d973eeb3e6b57df77e920db6b31'),
-      (249, 0, 6, 33, 45, '9d4769c94c7bd2bc1e94eebe3646262baa744bab11766667ff5ab81044342d5e'),
-      (249, 3, 6, 33, 45, 'b2e2213639a7c5a1be4d578cf636610d3401dc990b5c69a28bef7d770fb82b43'),
-      (250, 0, 7, 34, 46, '8cae8f3aadffa0b5442167cfaae0f1cc6fa11989c4f95029d421b420d9bea76d'),
-      (250, 3, 7, 34, 46, '4c4d1fba73cf9500e29290503d8ec2aacdb2db5fe6ff66c6f2e750d0e7fb9283'),
-      (250, 6, 7, 34, 46, 'f46515a619e68adfb041716a5f951a9116e11046d140846cf7fa2b4804d57e92'),
-      (251, 0, 8, 35, 47, '259f2645a665b1eb661403c79d27256d26282199e7e2f4e0a13da0e304ef8f7f'),
-      (251, 3, 8, 35, 47, '4d7ca7161dd2c1e61e9a689cf23b8079e438584c4014cfe92a3b7279dbe32e7b'),
-      (251, 6, 8, 35, 47, '0d36d3f0b56123315b5e7ac4899e74ac1f0ba6abe3c0597ba3dcac9094f4b411'),
-      (252, 0, 3, 36, 48, 'faba4a360f6a9ca285fc6d2a096a4a4665168b7d652eb84448eabf1a5264552a'),
-      (253, 0, 4, 37, 49, '938740d901efd2582d8c000063e248fcafe352fd2edbd9467586e393a3619a54'),
-      (253, 3, 4, 37, 49, '89895d246eba2005e9aec634e930936b39be4ce4a9db2427a1368bcda8214992'),
-      (254, 0, 5, 38, 50, '7e93af5e66ec205c5e07d6dc6dcea015373f0d41626c0cfddc6764fa393376cb'),
-      (254, 3, 5, 38, 50, 'e234427cb82152dc8731a885e196794cf927b2e23e0a4884b1be9e18e1559dfe'),
-      (255, 0, 6, 39, 51, '4028f1499fb753a2a25e6db7523b37f6cbd91ea93d2c13831bdec806a8492c85'),
-      (255, 3, 6, 39, 51, '43d79fecb3983faf302a762f1b0a214e3934a112f3aa57a9689c9af68fbae0e2'),
-      (256, 0, 7, 40, 20, '9b3b7e116cafa60a950c2e330d6a6e5f24502340c245bce443ae71ac1a8f4d4b'),
-      (256, 3, 7, 40, 20, 'dd050da989469a5e49472ddb5ae378e4b3195c5d9fc017ba2608d899553f2173'),
-      (256, 6, 7, 40, 20, '961c5ee38fa580aa01e736004dc42c73ebaab66865cdfa2b7360429a13e78209'),
-      (257, 0, 8, 41, 21, '69be377bde04064fee20489ec84c06a4f7dbe7e5fc9caca1ca3144f59ce6f903'),
-      (257, 3, 8, 41, 21, 'e0a6288af961915f68da44c776ce2364fcc49acbf99a83ea00ee75bb4765cf35'),
-      (257, 6, 8, 41, 21, '62c343f7295bbec7df431e8f660461b155892c14f218a8a7bea0b344bda60628'),
-      (258, 0, 3, 42, 22, 'caceb131dd764bcc290d7ebd79a0da8b41bdb49f1f6a0b7228b54960d27265c8'),
-      (259, 0, 4, 43, 23, '33b954cce673ec35aab297b8715d70b0b94974053eeb9dd9bed45e1d5a7341b0'),
-      (259, 3, 4, 43, 23, 'cb0a181b82bc532e7c2cb7c68b4b4a380be0fc622e36afa53b88bc49340350c5'),
-      (260, 0, 5, 44, 24, '3568124ac1d4542973f010bf4995d969b917a3f85765618768c49183aa79ef3b'),
-      (260, 3, 5, 44, 24, '9ac991f0efb37610c3dbd5ce8f4a587df7338c69894c88c0e5caae0a11ddfa83'),
-      (261, 0, 6, 45, 25, 'e3e2c3ead906fc1a59722edc6140a434d91c31ce70a82d429dd3433e3981d2de'),
-      (261, 3, 6, 45, 25, '6e84a7188299a88ef9e9b5b986d6a81028e3b9e644748a32c9ce59e7c8a7ea49'),
-      (262, 0, 7, 46, 26, '516a187a9e5c54e0f866a73db97de541ec76e2158e2bf887fac8c0b2772a3d74'),
-      (262, 3, 7, 46, 26, 'cf0bd4ae3b0ca9930742c9a798bf5531164cd42b90e8eca5712908913a19787e'),
-      (262, 6, 7, 46, 26, '94a55c312639cf2ebf73dace2f8caacb32112b5d86b5a4a0e174e7bd5da3b909'),
-      (263, 0, 8, 47, 27, '8757f6e1a90ea737e67ec60f5236e0afd892c8b660bef596ef82c5cbb7191e51'),
-      (263, 3, 8, 47, 27, '3314309562c17af189cca01ac3be1911295a5fef3819c92e347d2298e2bf4dec'),
-      (263, 6, 8, 47, 27, 'c8502b507263d5292fc9eb50517c36d0bba95c92f7587c30bcb2a9fdfb53ba6b'),
-      (264, 0, 3, 48, 28, '8b7502a2734a84c0ebf632baf808fd0f0746059d14c8231c8274712a2c8df685'),
-      (265, 0, 4, 49, 29, '8bc7c701557262fab0c7480d14740780f44cf340820c8202849a96176768c9b0'),
-      (265, 3, 4, 49, 29, 'c8cc40c6742ded8b87cb9f3127e8c653ceae1071ee0a49acc29bb71e1a51a5aa'),
-      (266, 0, 5, 50, 30, '9bbc3b61b0fc76966739a20141d1ad84ae421b50f32568af491edcf8941afd44'),
-      (266, 3, 5, 50, 30, '5bcdbe65c8bb0a1ff388d9b9831f6a679ea959cd31dd691f37a30e37d0c512f2'),
-      (267, 0, 6, 51, 31, 'd15fb9da98ecfde8118003ad88acd2943b77784238260052382dfb5a3d99136c'),
-      (267, 3, 6, 51, 31, '7c11f1ede59219499dc65ecedf585fcf4753c000e5a32a0bf53f874ba7eb8063'),
-      (268, 0, 7, 52, 32, 'b157ca82946469bffb1d5bbaa26b5e820fc117352e02d7ea46d9a2d2dec1354b'),
-      (268, 3, 7, 52, 32, '571f28a787b95cd3771a7195464efccf95d87efd276f6505c719f9ca3d5982a0'),
-      (268, 6, 7, 52, 32, '265495200aa3cbf580dcca3e39d5304c45b050e3bfaf44224a5e404d00910b99'),
-      (269, 0, 8, 53, 33, '5776fe2266199b945050968fb7b23a4878a2167effdb7aee45e6621d2fb436bf'),
-      (269, 3, 8, 53, 33, 'ba4d66168a38ad56afa9bccf98998fcbcd8800471a8d2a751a109f48151cf83c'),
-      (269, 6, 8, 53, 33, '7a02dc56a5d8db0e7738ea950f529c3036e39aa6a1688a0c2c05c30974ed1416'),
-      (270, 0, 3, 54, 34, 'a23ad3da4ffde09b4e4d01705d045f0cd6404b02b12a6ad0dc2c561e59e084e9'),
-      (271, 0, 4, 55, 35, 'fb5c88f84eeb2165c9ecfb9aaa6611d82120180fcb781cc32a326ddcf8d57cf3'),
-      (271, 3, 4, 55, 35, '96030d12476d31d84ab7ccc1fb4ce0da82a94ae55e048c6c3e238b0d498d04d4'),
-      (272, 0, 5, 56, 36, 'ef654ceef4c97eb588f545353ffd245488bef997a8a461d1230babf707af592a'),
-      (272, 3, 5, 56, 36, '5eb38a61ccc031ef406fc629be2e21ff1f48053afc4eb13cbe15797a98ee33d0'),
-      (273, 0, 6, 57, 37, '6f40340bf53043fe12968daac3576ef4cea23dcbfbe2f20f5ae4395326826763'),
-      (273, 3, 6, 57, 37, 'abf330407d2b2438e52215fa60cbf8b53ec2ba95e8f3d46818a230eceafdb570'),
-      (274, 0, 7, 58, 38, '8ac1ad0406058f5e9ee2e2bc8eb3e93a4a94b8ab26fee9746189a8b6171af729'),
-      (274, 3, 7, 58, 38, '2516a1e43452ec28511f92c7d1daf53a9339fcde2b2e93b66d2200f2c185e3b2'),
-      (274, 6, 7, 58, 38, '20a2452f769e8bfa532d62868a5bd4a1ece232c3d7a71647d840006e956e0b2f'),
-      (275, 0, 8, 59, 39, 'd5cde8ffc8d7a84045de17f082e590e98f7fab2675523574709427b02ac94b7c'),
-      (275, 3, 8, 59, 39, '0711bb40f813994abba7899b6dbf44674c7f719999904317d32bb6468719d9d0'),
-      (275, 6, 8, 59, 39, 'b3ac9fbb83d99a0b79ac01dac424e9a2e2cfcdf1e29e77b12f77d8999082ab26'),
-      (276, 0, 3, 60, 40, '6737e7277afe159d68aae59f7cb890b72267681fec16303fd8877cf2e9e59deb'),
-      (277, 0, 4, 61, 41, '88ced71565c0a966ad2875d8b95c2ef052a2b59c27c96bb8932f9de239d970ba'),
-      (277, 3, 4, 61, 41, '1cfbe6e8790266dedaa274604ea6b468a4c1a429006224719d01ba1e1dee0725'),
-      (278, 0, 5, 62, 42, '27ed6c74c7c6c21419b63d9849ddd8b0574f112f910b15a4e6ecdf7801550b99'),
-      (278, 3, 5, 62, 42, '00e03dcd6efbd1d3644ff21f7487be0c48ca7de654d0d6e34da82c300131f000'),
-      (279, 0, 6, 63, 43, '849a6ebf786690edb07ca293db36c6a03c69df25d9b596a238a116b6ab852495'),
-      (279, 3, 6, 63, 43, 'b09fd5ff0eef1c3947a4f4d93bd60e686f9ca9d633796093083726d1e2152a70'),
-      (280, 0, 7, 24, 44, '1a42cc362a11f507377ce82c5c0f1489ec00fc27833530d86ee1ee93f12b47b3'),
-      (280, 3, 7, 24, 44, '03fa51f6738e4dcab30717a31fd84205303c86d01642416ddf4a6759e18ae110'),
-      (280, 6, 7, 24, 44, '9ce2fc5642072c234def9cc832876b19c1bc80d25d7194bcd5f519e74064b9bf'),
-      (281, 0, 8, 25, 45, '9748da385b502e10336a849eecfe2adcc90714d75142fa5027bd5bdccb9b4237'),
-      (281, 3, 8, 25, 45, '88b11fd227a91666433cbfb3035c3588d0dbfe46f6aa30d7f17430d966826864'),
-      (281, 6, 8, 25, 45, 'f1bc772ac6b1e59566e57ed09db59d90633039c150dcf4b8ec909e7f1344610b'),
-      (282, 0, 3, 26, 46, '965a06a1e7177880d8ba0ef3ae0968912e30f7db3081be5fb24e99abb0083cfd'),
-      (283, 0, 4, 27, 47, '08acd6aa8e808095f6b762c0f1e24c81743d7a9475860d77192adf09f869905e'),
-      (283, 3, 4, 27, 47, 'd66b90ea1a46cf38ed90bbc4281e66b6d35327335c84ef7cb6b02d5a6159f976'),
-      (284, 0, 5, 28, 48, 'f3a0e79318cbaca49db60e4ec7e6bb16df8c7d9e7b636b3bff30f8d51a4ce56a'),
-      (284, 3, 5, 28, 48, 'd446d8007933917014b7532a66e90be507bc0040650bfacdad69fa0953e6788e'),
-      (285, 0, 6, 29, 49, '3e54e07c80f7df5bb306bd2a1878772c9f249e63d70ab9f1fa1dc23aa48a7ba0'),
-      (285, 3, 6, 29, 49, 'bcccc73626d0bb95fedfece4797a632685b2fb31eef77e20f8cc575930272a01'),
-      (286, 0, 7, 30, 50, '634de3cd493b741938dadffcbf365acc490b12ad14dbd877e10c642c57452b1d'),
-      (286, 3, 7, 30, 50, 'cfbe5c1eab527e83d721a431e26f12a5797e17b05618f3cb08efbf9e7fb1753d'),
-      (286, 6, 7, 30, 50, '253e321ef63ad498ac233dfe37e2f01f09b9b7f9cc52bdfcace860fb076acb47'),
-      (287, 0, 8, 31, 51, 'bbd6ae1f1caa7bace718d37a8dab1145d1c624bb142ac2d2f41513f3e38a6155'),
-      (287, 3, 8, 31, 51, '43f31ba20d0ec54323759467e374ffa869edd2050ef97c1314a2b88b56da6a93'),
-      (287, 6, 8, 31, 51, 'aadcb667c4236aef3e3c461f6d7d2a8fb32bc503d6ceb246cdddf68b421811f7'),
-      (288, 0, 3, 32, 20, '6e18379e9387e57a23a90df81206598bc0a094bdacb133372920358eb54fc186'),
-      (289, 0, 4, 33, 21, '1b0bc1d46c248667686d38ab571fb125613d240cab39f65e6a0beac5fe48a50d'),
-      (289, 3, 4, 33, 21, 'dbf770760ede6742dd58a667b8e1be897c01aaff6c04effd668327736c9be51f'),
-      (290, 0, 5, 34, 22, 'fd90ee7630dfd5eea82c2e4e458ff1d2a216f99927e0324c88d18032519c0ac1'),
-      (290, 3, 5, 34, 22, '875e944eb824bef61c86eb92a7bb930df19bebed9f0551ed686674a134768c06'),
-      (291, 0, 6, 35, 23, '7f2e7c1d15702de5c8bffd3943bbf3986c84a4e6d0f4076dfc3f32b1444c87b5'),
-      (291, 3, 6, 35, 23, '33999561dd4fcdb59a8808b15e4553bb01ff719aa288de6eda2362eea3431b00'),
-      (292, 0, 7, 36, 24, 'e95b71004b46e2fe0c3a9bf9fe24336fc31c721281d0ac658a2ee6899e8c4e1b'),
-      (292, 3, 7, 36, 24, '9442c8af2acf45fd3c9f63149fd9ef77d2c31b3c6b82c2966b014b12f50f9b2c'),
-      (292, 6, 7, 36, 24, 'ff29eaee8ae43a47de7d0d95f97b7fd8e81f9bfd0315fe6455f0178f0c7867c2'),
-      (293, 0, 8, 37, 25, 'dc63d7e6f55a092332c8a52c4c3f2d0a1f6e9743916e2e1fddd02e11df765523'),
-      (293, 3, 8, 37, 25, '0657d7e95813c0e219fb23caa438200f79e693cc9412afb59a6c1769e99ec25f'),
-      (293, 6, 8, 37, 25, 'a56dc5da5642f1d12a5ad9da45e38c9b27bc1389d66784f531df485b5baad8b4'),
-      (294, 0, 3, 38, 26, 'ff41939702fedd17fc30f21327b4dc8e28a4708680b926549ca73390bc10935d'),
-      (295, 0, 4, 39, 27, '7d0ad0c57e5f7449af3f0c37677f2618f2bb25916f20036bc9c1035504878933'),
-      (295, 3, 4, 39, 27, '5820e6338846506fde83393bed7feea5ec611e158c0c9f7d726063f4a82b7021'),
-      (296, 0, 5, 40, 28, 'a176c1a03de99e114da0d292259cf174725dcc0c66805257f55fcf229e0af608'),
-      (296, 3, 5, 40, 28, '815e729e14584611977f173a2ce48031d5aab50fb0a4dac98f0b5f591991e377'),
-      (297, 0, 6, 41, 29, 'f4e5ecba71b904538d9ee52f585c5ceab786242db895cda35fd6344e69839925'),
-      (297, 3, 6, 41, 29, '431da84c1c781599ba4460bc3acb53084a9f413bab037acebb72ce1445d42bff'),
-      (298, 0, 7, 42, 30, '8efc41021edafeab7f78cbcce10a61fe1ed44a142a198d24ac86884ec8a21cd3'),
-      (298, 3, 7, 42, 30, '13d50fab6655d98c34af6cfcdd26e2abe6f1f86d08f6f3e0a50ec062df6626de'),
-      (298, 6, 7, 42, 30, '4634817aa9e8d5bd572816b16df9aeeb0f97713d646081e94bad2695474d8488'),
-      (299, 0, 8, 43, 31, 'e87660e2220735acb6bf539d019bc1d86f3504103943756be8faf173d0b631e9'),
-      (299, 3, 8, 43, 31, 'ec72fd3d8efe3890b1fd55a455eba373d765951e24a1cdfb0c06076349e39a72'),
-      (299, 6, 8, 43, 31, 'c144366d0a9f5593859514f5eb2b10c9e72ddfddacf53977f72d86c747ab9a2a'),
-      (300, 0, 3, 44, 32, '3445884afa88de15d49e5d8f60548c2fb92a70efc13bff5d2832f571ca7f84d7'),
-      (301, 0, 4, 45, 33, '3f1d80c9fa33c35b7417828872f116b6526b3d4e94ec041fc9e5b5b3ed2acb47'),
-      (301, 3, 4, 45, 33, 'ddd8d6efde667a24f82280d27ba1d2f65b97fcdca8c013658940db1c37567ff6'),
-      (302, 0, 5, 46, 34, 'b5d3333d9b25ac34f8b74714c5766e208cefa16d11fd5c2a6a654e8e8389e703'),
-      (302, 3, 5, 46, 34, '32dd0927bb10cc50a2f54706b929f095c4a98c92ae3df46190ccea52a90075f3'),
-      (303, 0, 6, 47, 35, '1d759ddfa0e7d0fe447f2e7b103eb61ba65419387816b7fcd1e62f7df1b46c47'),
-      (303, 3, 6, 47, 35, '4e0648097f816619e83cbcaf14567a36cc0eb4efb3ee1bf017a6367d61231f50'),
-      (304, 0, 7, 48, 36, '6176b7c5d05bcffb5c08f3fc36d7a2c697f47f93658d983d9a776932c6e9c642'),
-      (304, 3, 7, 48, 36, '9265f1da30fb00a3de0082d46734807d86eeb2831456f3ec927509557d2a0cac'),
-      (304, 6, 7, 48, 36, 'b0a7680c5fbabf39a82ca2e636b5602adb2d9da310ac53a40e1c54da73b33158'),
-      (305, 0, 8, 49, 37, 'ae92d643af0b50871330c01c3bafe2e84c053afa7132e7101cba26e21b3e6d70'),
-      (305, 3, 8, 49, 37, 'a057aa90c3cdec807638f12a08112ee88a40c0c5e7b93b08b426595358cbd250'),
-      (305, 6, 8, 49, 37, 'fed8e069bfad13bc16b5d4cdff786d383f94245ce4e8071e2b8bb719f0ce3d93'),
-      (306, 0, 3, 50, 38, 'b13fc56eef28132a46081d1fabcd356760249a0599a1f5350535be11aa347d60'),
-      (307, 0, 4, 51, 39, '056bbb2ddbc1722f2a134f30275a49b0d99ec4e623f69b8d46d44fdcabff5077'),
-      (307, 3, 4, 51, 39, '92459ab1e4716ae38dfff7fc67a1ca1d2a39b30f70aa426f8fd2303d5153da3a'),
-      (308, 0, 5, 52, 40, 'eaa58627c1956f358bd96c09d855d767015980653042ce3ea039b80a63da3eb6'),
-      (308, 3, 5, 52, 40, 'ae3468ecde654c695185b5fefb8b562eb3577d5a57f9b7e54a50cd55ab68e2e6'),
-      (309, 0, 6, 53, 41, '106862989aed77764be5964dbc03f340ecc3a30bb395795f17c5f005ee2dcb33'),
-      (309, 3, 6, 53, 41, '19c6d5e25127ad51cd10841d4a6f79ee7c5e7a76f1af32927a1e6eb720516785'),
-      (310, 0, 7, 54, 42, 'cc2b3e36bf8e6303133c23bfddc84586e4c86ca129aa5bec08958a79713e6966'),
-      (310, 3, 7, 54, 42, 'feb7fd91458c6780052f72fa8045727bcac85f02f1eb0ba8ee03e265d11264e0'),
-      (310, 6, 7, 54, 42, 'f60995ce45b529ec8a118b799772a7333809c21acb6205bf559c3266fd1a41c0'),
-      (311, 0, 8, 55, 43, 'b5028de2abb8829b58a0ad13ac142b38427a3a93f4319b662a7bed451a3db320'),
-      (311, 3, 8, 55, 43, '7a8e2ea0824d04413909d851290eab5abd703b779027bb882f8196d6cb6226a5'),
-      (311, 6, 8, 55, 43, '00ea4b4dd80247664074166e4104252b1105bea58b8b504eba2d8f72296af048'),
-      (312, 0, 3, 56, 44, 'bbb139a75b025e1ed5da32b4eb192a97a51cb6ca15f3ffbc79970f87465ba1c3'),
-      (313, 0, 4, 57, 45, 'cded1759fc3183862ac6a056b8f2dc793ecac873a39d7d94e659f1086c05201c'),
-      (313, 3, 4, 57, 45, '43504329904fa145da2c0073fc6480641a62751a9c7c2722c9f8a42aeea560e8'),
-      (314, 0, 5, 58, 46, '65b4f82709b57610f1c510ee5bfaf5673675061142d6372e84a7646ffa9af840'),
-      (314, 3, 5, 58, 46, '49097e2c431147c8bf3fb8f76f0c5af5622159b5bec0a92c349f3f8868cc575e'),
-      (315, 0, 6, 59, 47, '0f098ef2f0f0024094bfe17fa905f02baef00ef73f885d48e52d0b9ecf680784'),
-      (315, 3, 6, 59, 47, '82d5019105323abd67638ad6528c5f34728bc3acb6d5c0ac45d2f968acbe0579'),
-      (316, 0, 7, 60, 48, '780c4b909528c4803524e6b52371b3d79ca3b4d971ab6a91be581ef28f0b35dd'),
-      (316, 3, 7, 60, 48, '6d5d591c391921b6ab4841956939b4c773b4e516fff640c0efa622cd120d68c6'),
-      (316, 6, 7, 60, 48, '5d9ade4cfb9bb2dcd7b149849804aa91b75fde425bff26585092c18ebd608aff'),
-      (317, 0, 8, 61, 49, 'dba368a560215ea25ab5bd89a657798f6e493e84e25a251a684ed933379a0a37'),
-      (317, 3, 8, 61, 49, '91a6b2b5c8eddeb4d51b3eac28fc85be22ef7765e84063a378e5909c5d9f6add'),
-      (317, 6, 8, 61, 49, '99ec8571795cff64ca992866a3e216668899d2ecf057ea7ce1387c166b364499'),
-      (318, 0, 3, 62, 50, 'ba6b8bb6ec057b1796b0ba695d054fd75b3ea631a369f2f7f15aad9ff5a30a28'),
-      (319, 0, 4, 63, 51, '580e7552019fb6d4ba3120db3a0a3776837714615a19e7872c3820213b36ac60'),
-      (319, 3, 4, 63, 51, '8184a783e3136323e38d81b9c7ba2845319db6b825688e8e01fafcfefb8a0b1e'),
-      (320, 0, 5, 24, 20, '15cb244e5ca506f594525ebbeba8ad706838dae22ee2f8875d46ddf5f32e5066'),
-      (320, 3, 5, 24, 20, '7a6574ae8a51aa64f37ef5a449d9511a1cb626a720f32bba32afc6bbd1095e05'),
-      (321, 0, 6, 25, 21, '40882abd82a2eed29515e499ede195220ce1be43d1fc1a05eca5026f6b3f0c60'),
-      (321, 3, 6, 25, 21, '4e34bc63f5bcd4e10c4009a78693bef40e957e94fa7ef4128703b3c91fc8e2ba'),
-      (322, 0, 7, 26, 22, '6f89b647124bee921d70c2446fba33a7c8aec44d59dddc7a89c902c32bfe40f5'),
-      (322, 3, 7, 26, 22, '9ea5bb585345b9ea106323bfb52fb894188d3e53816cb7c2b768d2b1b81023de'),
-      (322, 6, 7, 26, 22, '5ffece868b6351d7a240b848883ea43264d2708f1710fd5f79604afba6ad916e'),
-      (323, 0, 8, 27, 23, '810a2f7ceee9b88806f1e755a9256f861ca7f234cc704147d27299c739ba6576'),
-      (323, 3, 8, 27, 23, '488c04b903ad3c88f5448a5d4024229e099c05dd9c0fd90170e027259c8be8bd'),
-      (323, 6, 8, 27, 23, 'e68d2b1faa181e3b4ce5eee95f425cc0335640acdc43208b401e26bdd0ffbd36'),
-      (324, 0, 3, 28, 24, 'cf030a04523a2469274d5d159793f73247af8dff78356f1e74008e05e0fcdb92'),
-      (325, 0, 4, 29, 25, '35c02fbbdc86c87b70546cd08f41ff7e4071c176f7f417a25ad9ab8394a04420'),
-      (325, 3, 4, 29, 25, 'e83cb5a92834ddba9c5c0d64ebe620ce3fd23329aae181bcc9a3b386d1f3aa1b'),
-      (326, 0, 5, 30, 26, '7dcdcc80047724b8633ac44b5328408e78c3d81c02e997e0adc716d3da66bd12'),
-      (326, 3, 5, 30, 26, '21678adbee4c8ed854b819692fcf1e37ec02b6a7a3c504b1c71796cc9d6866ff'),
-      (327, 0, 6, 31, 27, '59ce02e89c91a4e75439ac739f4c4aabfe6260f285adc4971cd334e0cea630e3'),
-      (327, 3, 6, 31, 27, '95c381a73af50cb21f2431f556253485dccd7b7f0c289834a915d1f4b134ee86'),
-      (328, 0, 7, 32, 28, '07f113a2f61079300ae25d85b189aa8dda4eb492e9d780076c4671700f4f9d37'),
-      (328, 3, 7, 32, 28, 'a1619f2a8f1c417f8318b0968e3b52ad087023e3bf50547d9659d5db920a4e1e'),
-      (328, 6, 7, 32, 28, '27912aafa7243af4155c0c48b2154544d94bf14d8e857bb2a1b7de621c85c74b'),
-      (329, 0, 8, 33, 29, '074f1b2570524c541c5157cc7a6611be6cdf6ad0d51737097df09394a756b332'),
-      (329, 3, 8, 33, 29, '3fb34fc4da7d2780e85a9c86c70369fc9df90dac2906d08d7bb428791995bd65'),
-      (329, 6, 8, 33, 29, '1f2789d0112bccbbd2ad344f102bd49afb7fc38318ddcbd6410d65c5dc8653a4'),
-      (330, 0, 3, 34, 30, '0f1129726b69221b9ab31d15043f03b8436e181df7abe7b5adf86da17560be13'),
-      (331, 0, 4, 35, 31, '76b56d77971227646b5ba5bb1796f4a0e695868721817dc28b3af91ddc67d9e2'),
-      (331, 3, 4, 35, 31, '3e9f6a8503e1a7ef8259422032e7a7866508eeb20ae1c79d7d47421aa233c67c'),
-      (332, 0, 5, 36, 32, '0923eb824025defb53421f38d2cfa73f08d447660c6fc2c5430b46729b92598e'),
-      (332, 3, 5, 36, 32, '9f2dabbe83c29632851c0f94076e923f5724b20b7976a59e0720461e9a79c00a'),
-      (333, 0, 6, 37, 33, '3d5ce98149bbeab3f909b792e73894783d4a92df73f99fb1e2e3817891210201'),
-      (333, 3, 6, 37, 33, '725c0c4c9bf5e6a8c1f020fd441511849603d6d77983fc29e87ed14b1876eb41'),
-      (334, 0, 7, 38, 34, '088c8386e162b219122c5ed2d4ca6601b0196f053b6ab7fcaa45d125cea7c527'),
-      (334, 3, 7, 38, 34, '6b46765149d88230e9d90dc7d8e63d1a15bd78ec948329ec460e71140f9489f1'),
-      (334, 6, 7, 38, 34, '0cf423481456f757e5f119f4395821de832f75ad60bd53a85c710bdc0f7b3a68'),
-      (335, 0, 8, 39, 35, '83872d37e4264f46f1fc9c62cdcf0b60a6e0f1a8a5d0d12fb6bdebd70c7b37ca'),
-      (335, 3, 8, 39, 35, '005ec4686bf70d35df6f023a7320094d2db9ae1753860d74e37f284a608408da'),
-      (335, 6, 8, 39, 35, '935cb4efed572f15d810b094b7ca4a4a54fb6307eaed2f33424e7ba16506e2bd'),
-      (336, 0, 3, 40, 36, '8e6fb1c9fb30baa5c102977e5b28b13233bb71ae6249e7c1607cacf4426afec8'),
-      (337, 0, 4, 41, 37, '0f8645156f5765ed78f5e79cd1ae075120f163de313f3a8a91d3aae4defa13eb'),
-      (337, 3, 4, 41, 37, '4fb96fc0983a6f523930e8e8d3e9273238419dd7d5ba6fd94e7aa2cb6b80d1b7'),
-      (338, 0, 5, 42, 38, 'c690a04a7ddf7266ccb63fa613b4b5fe2e000a4ec8700cb0762122515dfff5a9'),
-      (338, 3, 5, 42, 38, 'd2fef3c01d67c8d560cb52491ecc83e0fa7fcac7d5f9ba7afcaaf6743d327ffb'),
-      (339, 0, 6, 43, 39, '3bff7f0b89aad58fbf13ee0af80d0e0b092f617515dfb0e730b2d237e1f95408'),
-      (339, 3, 6, 43, 39, '3ff1126fa116dacf83dc646ef7c71772b1b8c63ef36382adab44490e176a35e6'),
-      (340, 0, 7, 44, 40, 'aaea76b72e5e437828f769997f027e2f35755a4016b6811aa79cc589b0826f8a'),
-      (340, 3, 7, 44, 40, 'e7fe9a203111d680f8bb2b7eb9b65830b856162f6d7919cc1e6fc6bbbc652c7f'),
-      (340, 6, 7, 44, 40, 'a23a74af2607461e0bdadf1cf8d5f4d002828297180135b219632cbbc98c0821'),
-      (341, 0, 8, 45, 41, '87449e970b6109cce2b6aec5a77ddf21d1d2e16e311865a9a05b04ec9adf5446'),
-      (341, 3, 8, 45, 41, '57cff1c8ccd08205837fb2771095cc0671ef152544ddbfe94a5dec8000b03cd2'),
-      (341, 6, 8, 45, 41, '6254335e5bcf6aa0aeda4ebaf8e0865b1b0d8da43eb6b782504107832533fb3f'),
-      (342, 0, 3, 46, 42, '43bed403d7f7ced3ab6b50cf222cb440e789b30a984c4a05053a60db8c1fb0bc'),
-      (343, 0, 4, 47, 43, '78017d39900dfd2f61abb1150f091e615465076fe8faf0b750abc6c308c88ea4'),
-      (343, 3, 4, 47, 43, '70a70264df6b23a32a68a009f062d8c4f3fea395282ba5cd6ced82c9251108f9'),
-      (344, 0, 5, 48, 44, '71a7b8305156b99e1b7ede2a8e7b574a3312fafc8e8ffa61f866110f2003ce5a'),
-      (344, 3, 5, 48, 44, 'f2a3e0499b1ab6b93ccc25edf0096fd12a59634eeeb4442c0ddd793119ff39fd'),
-      (345, 0, 6, 49, 45, 'e53dd47810a63fc2716c6e0a40fd4fb111eb4bc0160212327255ec19f16d0086'),
-      (345, 3, 6, 49, 45, '163017d333b5fb45fb5d4eaff7d32b589e62eacb22bfdc4c1a535f1f4b3921fe'),
-      (346, 0, 7, 50, 46, '969fe1ecf61a385455bdcbf74ac0b316512629c1eae2ec49b8322c3c2710594d'),
-      (346, 3, 7, 50, 46, '968fd3e2fabbe45600f655f4f61656be7514cec86adbe12e17490f4ef2596a08'),
-      (346, 6, 7, 50, 46, '0f4e7702a638d9c22cbfe416ed91bd4af219261fb858b1131d9d3b90aff6fa48'),
-      (347, 0, 8, 51, 47, 'b48c0831814cfd719adf5c5fb53c4da40c94e55700d422998e0bdff327147f6d'),
-      (347, 3, 8, 51, 47, '9562a7931f4f0cb3461813cbe42ef8ec604a63db71a9ebf3e2169bd285256837'),
-      (347, 6, 8, 51, 47, '7ad0ce9fb7468c4245831803fb2a9609a80dd044818aa53c507915f294bd16da'),
-      (348, 0, 3, 52, 48, 'cd4c54fcd003a59181a37219a0252f4fdad5ee22f5ce0f3d7b94ef5399758aa3'),
-      (349, 0, 4, 53, 49, '3f491ad498a5dcf232a8abc96fb32fb9319f48f0e9898f26c36e34ebc69cdfa5'),
-      (349, 3, 4, 53, 49, '0518c1cd5b2d340feeb8d9f9909cf01c86f7c95c297d1a6f2d1878d5f52b6b85'),
-      (350, 0, 5, 54, 50, '8411a6e6758d91d9dd735e6bf477d1f8ff3dff265c93aa8b9b05c5ef06a0f202'),
-      (350, 3, 5, 54, 50, 'ae6412a322bb382aab01635f98cefc02796ee166f86e502c66c180d9891edb1f'),
-      (351, 0, 6, 55, 51, '2fbfecd6f8021cbb6f27cca3a184f77c103fd3ddfe9aa0242fb3d42bce5c3630'),
-      (351, 3, 6, 55, 51, 'd22007679dc09ef4f5380c04bd7d1f9c58b468231d8eb2561e69ecb0d67be800'),
-      (352, 0, 7, 56, 20, 'b7c2be55d13c9205e1265c62d5b04ded15d11ed6f575af586d9864127714040f'),
-      (352, 3, 7, 56, 20, 'a4ebfb3763f0cc783676fe2b0fc3f00428eb40b6811cdccedefb3e650f07f52e'),
-      (352, 6, 7, 56, 20, '006c7e8cdca13f1f04d56640349e44cd56fd5d3606a8783b6e7bb0cf8a502a5a'),
-      (353, 0, 8, 57, 21, '75a51091b5eebe12b16732cae1bbd20b2a30a98a9f1ad4d2f03f2ed06be87a96'),
-      (353, 3, 8, 57, 21, '14d7d0896778c2ff0902e3c97072f4ecba0a0bbe04c7857fed3b70550786db9d'),
-      (353, 6, 8, 57, 21, '6e477039742bd5b8713d3a33908d7cb79d5fe4e25106c747de680f97b54cba7a'),
-      (354, 0, 3, 58, 22, '3901aa2e46f07e0cf981030a8fa06e57d8bbfcaf38ec87f3c81c67cda4937d78'),
-      (355, 0, 4, 59, 23, '656a67bb593697ff70b2fbc509ac673bcb830657f6b4dde5041fa06773f80e47'),
-      (355, 3, 4, 59, 23, '177bc6d21c675e8eab6632232646dc982613d3da1f9e7bb40696f7e786e0422b'),
-      (356, 0, 5, 60, 24, '539bc820371c598d88f8c97953487fd2ddd81fa7a1902f72615aa53b101baaa2'),
-      (356, 3, 5, 60, 24, 'b9397cfd98a4b979e6b6d471a92d26d47966672c596ea255844fa2632ba5af93'),
-      (357, 0, 6, 61, 25, '58a385e729475c4febc528b7651d49df8bb59ec40cf483e3bf2b8a2699698176'),
-      (357, 3, 6, 61, 25, '338b1099745ae8d4df4983c9e7d11651ec57a76c4fea3f02c2a4db630b90b77e'),
-      (358, 0, 7, 62, 26, 'ac927108f564f6ac8de4ad709669f56bc83f5301b124977f4dc18c0ea08cbd69'),
-      (358, 3, 7, 62, 26, '16efd1fbfb32346eb3a8fac00b2ec535a1fbe9eb7c0b70146300d804ea785541'),
-      (358, 6, 7, 62, 26, 'a75da80b08308d043fa85c23b86dde40b00cde2a025f1fc21d5fe8ffe05cac72'),
-      (359, 0, 8, 63, 27, 'ff5a4dd5862ca99d9376dd0e8f9b654ef91a3cce24f426281395bb63b890c0d1'),
-      (359, 3, 8, 63, 27, '92b0db1dd5e876b6cc8c1037da13dbe4ace155d7ea69902164b13a808866495f'),
-      (359, 6, 8, 63, 27, '22b28396039575c0eb35715d0d7f1b9ef2c89928b8bb0c1778511f5ea10337d5'),
-      (360, 0, 3, 24, 28, '6052784d8314eb69730026ca4d447389b3f712c14cf95b697f06797cc660e97c'),
-      (361, 0, 4, 25, 29, '1c34cb13fa5f927d678ae8e03f3fc517f80b79f388147cbef5dcf754f1983b11'),
-      (361, 3, 4, 25, 29, 'bdd92b8d95c266a800bcfb89ad59461193e1fd8d0d9ab6ec14fcdc80be3664ec'),
-      (362, 0, 5, 26, 30, 'a70861ce66582417065f5b8058577f98871aa73d4c4088cf1a760b9b3fdfe531'),
-      (362, 3, 5, 26, 30, '2ea0838aae6a8368c4cec2a2f176171fdfd4e54c3a47a47f03401c5aa439debc'),
-      (363, 0, 6, 27, 31, '86f75fdc95238157f2210e4d201f8c549ad74fa4fc51f2952e35c41479d745f2'),
-      (363, 3, 6, 27, 31, '597783d90ade3162c4aa4da144816ddf4197ac39546ac0aad1eb14b699b86dbd'),
-      (364, 0, 7, 28, 32, '2f1dabb0c278dffe9c035e8a38f82ce857f2d5c7e205cb23d01d3b58481c11a7'),
-      (364, 3, 7, 28, 32, '074c28bf5144d115758315e65478476615082a68afa749b24178209aef23b4ff'),
-      (364, 6, 7, 28, 32, '1de6139688ee650899cd94a16c41c8db7f51979098ea7c8b901e2724d09f57a2'),
-      (365, 0, 8, 29, 33, 'bb8ee8f698b99f0dbfe15917c0228307ab54035c7f558eb79dca869040fea7d7'),
-      (365, 3, 8, 29, 33, 'a0003299898b67d32e27045f1dcf763f6a649b06868e605b40867116b1249896'),
-      (365, 6, 8, 29, 33, 'f4ae8417cbd5a4fb11bb0711d8d932d3eb85baf1f6f67391f4ba6c4cf78578e4'),
-      (366, 0, 3, 30, 34, 'ab86e75013b5d7887b3f842fde8ef319339ed00084f680007ad88100ca5fee2c'),
-      (367, 0, 4, 31, 35, '8b8ec239347c801ac84530f0fa42dae7e474cda04360c1e24a218fe7e3e531c1'),
-      (367, 3, 4, 31, 35, '6b12580d2c93faa96d8d4815f53d1166306eeb733709117a59bb40cd2c595ff6'),
-      (368, 0, 5, 32, 36, 'f78fecfdb11e5fd7d1728750b36e351ed069776fd699d3c9a809a07c0648a55e'),
-      (368, 3, 5, 32, 36, 'b731099eabd46da9cfac097c6cb4f75c96ae918854b5bb4ffb6b24b74a8ea67d'),
-      (369, 0, 6, 33, 37, 'd59d9eefe8d564c6c84e6015d8d1304de1945062a3374e243347519e969631f7'),
-      (369, 3, 6, 33, 37, 'f527d345157de8c304e080e3cabb5dbf9e2a3d59d834a6ed94d1e18a4b3ff35b'),
-      (370, 0, 7, 34, 38, '0a3ddde2c932ad02ddcd5e0fd6eb47cee181a54c0c31ae7a1112d06470c3d373'),
-      (370, 3, 7, 34, 38, '47ed7f1c84a512a2dca0df98e0a0e7c7c0c04c885050306e79e29593ea310d88'),
-      (370, 6, 7, 34, 38, 'f6ae9c159d8203d3043d658a5849b5b37a7c533cb8eb8d47c291a145cc09e744'),
-      (371, 0, 8, 35, 39, 'a0ad2a16cd27e3ed9ae6d16e180059328c74c10e0ac5a4f08f91fcfc967f8fa9'),
-      (371, 3, 8, 35, 39, '73aa2a782822f4ad904aa08f0ef72ae2be9e1e83a76fe98d091f142e38d902e4'),
-      (371, 6, 8, 35, 39, '1845e4ea645bcd09d0e64287cb3b6a3730bfb59edc55c14537567bafe57886c7'),
-      (372, 0, 3, 36, 40, 'fa9e8d7f72c200245fb911f404c5b7a28416371af99ac6282bcfea76f2b4b61b'),
-      (373, 0, 4, 37, 41, '53883b7e09ee37f9c54ea412b8e7f09817a6e89e42278e013a0f4af5bdca5a14'),
-      (373, 3, 4, 37, 41, '140c2f2f69ae3db97ab5010d7f5a3655a236d391c6aee4ee2a85d5650612d2e4'),
-      (374, 0, 5, 38, 42, '9d1bf61ef91ae382b409ad8166b9d9abcdcc566e461af8b2459ebb634fdb1c35'),
-      (374, 3, 5, 38, 42, 'aa2bab4a123ff29a2319eb2fe7a24d6fd69fc7a90e3dc51d5040bde3aa43fbc1'),
-      (375, 0, 6, 39, 43, '9d9b56cfa50bdb84d6599e9f95fdf46b3306e114d9ae5ccd099fd8f0acbd45b7'),
-      (375, 3, 6, 39, 43, '052f876df609b4ffc6d7907cc9753c66305b4af3c3c07a2eba4d16b136e52a5d'),
-      (376, 0, 7, 40, 44, 'd2a264eb36fd274da2848fd3fcfee2832dfa3eeb50e7755099a76b6ed4fe9be3'),
-      (376, 3, 7, 40, 44, '76675681d07cc12354122846d4fefb5e2273a206bd2fe89d5890aacee4c8e121'),
-      (376, 6, 7, 40, 44, 'cff6724433c66003b9f92d57633a4e1b6df89078ac0f9abab085bd5036251858'),
-      (377, 0, 8, 41, 45, '01851ad769c611c9b27cabd184b338e27890184f4a7a307d81b65fc559451266'),
-      (377, 3, 8, 41, 45, '7d74692451133e37e08b621bdf4e967c3fd021eefef5ebe3888ba0fcee467b1c'),
-      (377, 6, 8, 41, 45, 'f0c9f3704d5a32d66890d92d6042769c5d58b3fb6eaca5395320750bac224f0c'),
-      (378, 0, 3, 42, 46, 'fd4331f8c4ace8698a63d9a6f83acac99ed5eb4009a75dacc49ad01ef6e174b2'),
-      (379, 0, 4, 43, 47, '26bc27dfa69b19853222fb9b8546dc5b498cbfd7680431f1f0627c3802d710a7'),
-      (379, 3, 4, 43, 47, '22888e26916ad693a9f110cf462697497c1d3d7b60166da4f4d31b04ae84685a'),
-      (380, 0, 5, 44, 48, 'a570700b7954c91ec7c256d7bc0c0f0ca03ed345a4d01d18b000a1747a66186e'),
-      (380, 3, 5, 44, 48, '6add5edf345b4f0c9a4e6b6d6d42ef1ad683da62842b240475e3fada34abec1a'),
-      (381, 0, 6, 45, 49, '0f2ddb6d75dd5025f2c4c1005c9f9f57d01c28c7460bf8bdf2259134f4f75485'),
-      (381, 3, 6, 45, 49, '7af2d71b0bed4a8ec4696571602c9a7f7c6a8a132231b438d27578d7fdd34fd9'),
-      (382, 0, 7, 46, 50, 'df338f2a5af61ebfd4f4503fc7344d47bfc50489ffcc420e1d2c2cc1f89ce176'),
-      (382, 3, 7, 46, 50, '13bfb9a0d83813ecddaef742c866be9b282b3a7ca2d7398c5e6bdb73bb3db1c2'),
-      (382, 6, 7, 46, 50, '00e3c4b6a12a23c58c5166b559c8ca7d1cdf1b220b2a30ea818e0af20c7130d3'),
-      (383, 0, 8, 47, 51, 'f1795665608928c5dc0370fa4368272944698124c31ef9bd21590d3f05dff2b9'),
-      (383, 3, 8, 47, 51, '317bfa4cee988774ebe5345a4bf1a26771a4ead1189ccada7f2a5a0f5df59f79'),
-      (383, 6, 8, 47, 51, '6509a5ef1725dec15785ee92b6c4798ebc3f63ccd43ba4720aa2c0374c190b60'),
-      (384, 0, 3, 48, 20, '1b656362e04f237b9a9487281ba3bd6b8cb5fb262ac67da90dcdfa580bad8031'),
-      (385, 0, 4, 49, 21, 'f9d69a970d8943f52a2d31de4291be81447cbb96a641c60125afc9f07e0797d1'),
-      (385, 3, 4, 49, 21, 'ae439da0e1cffc28168202cdac9ccc2edee90d303397c82a31f89f88b64d1a0c'),
-      (386, 0, 5, 50, 22, '58716471ba25df8f3cdce265affeaace58387218acbeeaaf7165add3dfdc1bc8'),
-      (386, 3, 5, 50, 22, '41d2f4addb41ec84a061833c50278c4b33220cebc4dffa48119010f5d41d65fd'),
-      (387, 0, 6, 51, 23, '66ff7dbb02d4417ff6beb58276cd36bbdffc27f557b155f6b4d3c454103a35da'),
-      (387, 3, 6, 51, 23, '4e029de56c6d8967c8cacf18094bd2d8011fa480a008984e8685818cd914099a'),
-      (388, 0, 7, 52, 24, '5807db611e665d6a28f09e0a3c00b781cdde0ff30a3c49fe312a59246682826c'),
-      (388, 3, 7, 52, 24, '97eb39a179570da45f3b84144342432fc899da03a1d10f037e2ff0cf6b0b6bbf'),
-      (388, 6, 7, 52, 24, '9aa6de63c872e6ddbfd6f85ac1cf3de81be3a9fdc277b2ab238d51b285ef1669'),
-      (389, 0, 8, 53, 25, 'a246880c5a7111b02032c5af8e44b3b5e74fdf8269e2721ab68892f19b02d28d'),
-      (389, 3, 8, 53, 25, 'b08f76ac073a0ffad19c7889fdb79d55dac32fad1e5429678778c489eb92540c'),
-      (389, 6, 8, 53, 25, '69d1bb7dcf7f38b76cd7a1cf3332f723e7de635d5366640329eabdbc6d586a9e'),
-      (390, 0, 3, 54, 26, 'f1223cfc4503d6036af53dadbe1c5fb44c0649346d38c67a0ba9b4bbdc3c48fa'),
-      (391, 0, 4, 55, 27, 'aad8340bb61932cdeecf69307100b220745ee476c942bd3ab235de773bbacba1'),
-      (391, 3, 4, 55, 27, 'd523ed244fc0334e5fc57e94c31c39d1b6838ea8b920a1b77ce2e518cc270950'),
-      (392, 0, 5, 56, 28, '2445bc455130f0c84a9cc35292c293b5c9c8a1711ca53352d741e9e61f4e727d'),
-      (392, 3, 5, 56, 28, '86aa6a7e2f59dc12e198456f9413a0ae7e93603fd30e86ce20f9cac83a92626a'),
-      (393, 0, 6, 57, 29, '3022e40d3afa4c606c1d5490e16bc6450ad0a5fe4ac3618ba45bb2a6a676f2b5'),
-      (393, 3, 6, 57, 29, '3e4e32efe6e83b595a7c6fd337e997bbd5f5c41e838ae1f0218d84fab14e7a2f'),
-      (394, 0, 7, 58, 30, '6eb6dae0eb7c1a063e80a3d173e13c8db868feef560cafe1a529d37584e96f5f'),
-      (394, 3, 7, 58, 30, '1283c4b4e205ee853d3288dae9b296ed3cc33993497ed69fee38f24fcbb61c64'),
-      (394, 6, 7, 58, 30, 'dee25406d7d4cae7612e040a1051ac0f902fc260b7d34344c15c4a22ec94a019'),
-      (395, 0, 8, 59, 31, '2b02e1d701a37ad64e0d2e1838e243544f62cc3a67afdfb3a282e4ddee035ffa'),
-      (395, 3, 8, 59, 31, 'b231d47088bea1bd8274c305ccaf69c2a84b8cde0dfbfc3073567bfe8bd418e1'),
-      (395, 6, 8, 59, 31, 'c3503dc171156857b32de8175adca46e9376d94648de8749581299c2d46b7982'),
-      (396, 0, 3, 60, 32, '3baf300d40e467cda35da567be5a153c98be2528792d61878a3d75810d293367'),
-      (397, 0, 4, 61, 33, '4e623d69c6e383abcfe478756ca6152679f8e2863c1bed36855f33e929fb038b'),
-      (397, 3, 4, 61, 33, '3929b21f3400a5252d177c40c81fdad442e5ac2bb2339dcc42faefc970740f33'),
-      (398, 0, 5, 62, 34, '153f034b9bc9249ee7278900395e38d335539fab70091f0cf5b773570564e0a3'),
-      (398, 3, 5, 62, 34, '0a25dabfa88a9d786997b11e357d5d45141de2fac64bfa48137c21768afb7aaa'),
-      (399, 0, 6, 63, 35, 'd0a2aa5fa3df4adca90fe61e454d812def74ee216e97b2319a17de8340af9fcc'),
-      (399, 3, 6, 63, 35, '3572f7323cc61287121da5dd9b359b72a3eb55a9e3fd4d2ffa5d0c71d44323a7'),
-      (400, 0, 7, 24, 36, 'a3c5f7f7f382cc97797b3f97e6d91deb90c373791254b5c8b42d8d17e74e0898'),
-      (400, 3, 7, 24, 36, 'b917cd4e1cd4c7e94fb4bf9d81e0314188b5690977decfc645e079e1e0d7cd8a'),
-      (400, 6, 7, 24, 36, 'd7d39f33b494b2bfe9f6c1727d8d535b690a1d50ee983723746a0094659a5b1b'),
-      (401, 0, 8, 25, 37, '49775fe67e0c38c40d530c1b813f0cf0cc3865a4593ce6ed75780cee7b5e0b09'),
-      (401, 3, 8, 25, 37, 'dc30ff6cf6abda6f7c424f594a563cca23d4df06dd62bbf78f75b1f020e14eb2'),
-      (401, 6, 8, 25, 37, '806bd53fd92147cc55e7492f3a44333d8e3dcece4197d2cd24b03c7f6833da97'),
-      (402, 0, 3, 26, 38, '69059cd182beb31c63ba9a7954fd1dfdc0c90415d50ec56b0beba3d81572a732'),
-      (403, 0, 4, 27, 39, '719efd8f25a522dac5507811d8d498040e8353f4e487e73d9c6a7f8359a98641'),
-      (403, 3, 4, 27, 39, '92015524d2ef3ddc22e5a71b05792aea5cab79fcda356910859f6f97749c5b20'),
-      (404, 0, 5, 28, 40, '1c24855d760e862ba115ded6df11aacc21d975fa3f5cb37f39f57c9be7aeaeb1'),
-      (404, 3, 5, 28, 40, '7bad96c62965228fb6ffb83ba18d300a24a571b0bbe7bd11aca698784a8e4d6c'),
-      (405, 0, 6, 29, 41, 'a541f4483d9265a4152ae4439eb1a5445ca55c400865a42094815072e27bec7f'),
-      (405, 3, 6, 29, 41, '1975541bcc14e0b3cb85563b0be918467702972498f43f4965363897c934b651'),
-      (406, 0, 7, 30, 42, 'c1d9b6e3a720bd3867773684e04722e37b21ec89761dfd644d34c39251520031'),
-      (406, 3, 7, 30, 42, 'f2b29fa44ace8a3158a668a90f809e62386ee2a60f8d0b06135019148f7e60eb'),
-      (406, 6, 7, 30, 42, '09100dcc27e097523bbb55be2904af5be910373f433f8458bee3e25397762fdb'),
-      (407, 0, 8, 31, 43, '27da4a7cd2554e747616a71cb3c1f4827ebbf227edaa91a10aa7bcc425e5f872'),
-      (407, 3, 8, 31, 43, 'ee8e3e197304d6286327c99d1640982c6b88a82dea399a7e6b090870cf45c827'),
-      (407, 6, 8, 31, 43, '043958ec0b4b5ea6a2992ba7ca7271eae78a29165cc9d44b9bb70c008e9a63cc'),
-      (408, 0, 3, 32, 44, '1311296ab9f451f6a520a00fae862fb4cdba3480282038ce97b5024d9302c6ca'),
-      (409, 0, 4, 33, 45, 'ffa1d5878c7f551adbab0b5a243c0e328f0e99a6b55c8ac027296383aa42f4e9'),
-      (409, 3, 4, 33, 45, '28773377b3ab74b427ffb07f00c305780dabf0cc88acc609d77c151dd3bfedbc'),
-      (410, 0, 5, 34, 46, '9c1304a7db30c84a6ac3980d2593dd7e4df5362158134b1889d5a4fb2076a159'),
-      (410, 3, 5, 34, 46, 'e73256b19817b637f8648e5e017320cdd767d2923e1a77f3be7c59040c74f82d'),
-      (411, 0, 6, 35, 47, 'f1e509c524012964884b23421a7bba713555ac32fd6d91fdce4632448a27c2ea'),
-      (411, 3, 6, 35, 47, '715b6a314d207fd8ac93ec456676848f1e9b2aa151561d2135f89e3c2bd17bf7'),
-      (412, 0, 7, 36, 48, 'd0444f34aee6137071ca5102309f8bab66e5456b7c3545a5739d0b578769279e'),
-      (412, 3, 7, 36, 48, '8f3de45c1fef0df396dac53841cc2beac0eb18cc604e14cdb9452ecbd0390a34'),
-      (412, 6, 7, 36, 48, '516cce2ea8feb965493897c35616900bf727c86d723e120b8a6ed62370e20beb'),
-      (413, 0, 8, 37, 49, 'd1483256967aa4eca9aa67266e3e734a071680a733b69451bd7e3089f348e8a4'),
-      (413, 3, 8, 37, 49, 'ab9e29259066ec1a492cbeae01de652124573450013f48a2c13c32be9b6960a6'),
-      (413, 6, 8, 37, 49, '05dedb11d5a15aef4708af157b0e5f979e3bbfc61f8027bf0cc42a0eadd33ada'),
-      (414, 0, 3, 38, 50, 'c20cb1408807f2f943b4e1c519702b387e15da1c71ff470ed7062af1a6d39c51'),
-      (415, 0, 4, 39, 51, '8e942e1e63258eee1041ce5357ae6034a027d128e57d8fe87527d9e397410b4a'),
-      (415, 3, 4, 39, 51, '35b0854ebc3153b652f605afbbad29a1793d90ae24ca417b87fb04836a081d34'),
-      (416, 0, 5, 40, 20, 'aad55d05a4fc8989ddf3dbe7c4c020c4a038bc555838b9521b2ea4724ab44520'),
-      (416, 3, 5, 40, 20, 'e205d045fa97ccd640fbfb5a45a0883ef0ff0301705a31c1eac816fffc3ce959'),
-      (417, 0, 6, 41, 21, '102033d5d4024894ed87989a00aeb41d978bb8e9e1a3db74543d107e2d1aad36'),
-      (417, 3, 6, 41, 21, '7767c006a50e58ffca1a747ed04b994c867a6d76c264be8eb25f3484fe383d6c'),
-      (418, 0, 7, 42, 22, 'e69b5f9b1b91cae97611173ffc72c2f2ddbdfe787a4377b558bc27e501ca513c'),
-      (418, 3, 7, 42, 22, '6fb8646745246e5450ddc8e7007a93a1d33ae5a14fd31cc5d6741757e2814e4e'),
-      (418, 6, 7, 42, 22, 'adc055eddefd6ad28686b091aaf66f2db9e7c6309d16d1f6ec278aaac1ad4eaa'),
-      (419, 0, 8, 43, 23, '9c6b8d443f736f5864ce2d37216cc0a23a610f8a3284fe5e3b8a9524f3ed5344'),
-      (419, 3, 8, 43, 23, '25dd254916e0c3ca9fa1a770ed7e39c938e41495c3421ea929ffb697b25b51c3'),
-      (419, 6, 8, 43, 23, 'efa24a9e093a5ec14bc4cd9f50794518fa85de057746cc5ca38ae09caa0353a5'),
-      (420, 0, 3, 44, 24, 'dd471b7ca44d9851018309e22137f9af67c2b8c88b33e98b5052b366825f7142'),
-      (421, 0, 4, 45, 25, 'ba8284e7ee267f0a8c9089db435adaa745abc0514f8640dcf80571da516a1d5b'),
-      (421, 3, 4, 45, 25, '414c0970d3fcf91b527960be219573b980745d7961c3594590dc370bcb9599d6'),
-      (422, 0, 5, 46, 26, 'fc4ab5f1224e99d105728ea429291425e12e155798c6a805d49d06d1cb7910a0'),
-      (422, 3, 5, 46, 26, '91c3ad5603899a2f8ebb02f645acba0e7eebc75bed7082460556e1d2b732b24e'),
-      (423, 0, 6, 47, 27, '39db9278845d82c714735201e0f423801200cb65e6ff8129439c09cb5581623e'),
-      (423, 3, 6, 47, 27, '8832527dc1ad4991de05f107fde54308d2c7b8fc7c647b9bafcc58ec24ce0bbe'),
-      (424, 0, 7, 48, 28, '9db1c33592a0b3ceb90c81599846877b73ed4b37094d0857a411912630255e08'),
-      (424, 3, 7, 48, 28, '4a869e13b22bef25e735c2f965b264b5350fc24ee220b759270b4bff68b75f29'),
-      (424, 6, 7, 48, 28, 'fda70fcd16bf96439c15d346f505b5e9e62e8bff48bfe2f403c33f47ba3a1ec5'),
-      (425, 0, 8, 49, 29, 'bd48c0eb9eea5a5a3fadf3b5a3ec7afc7159a13d244c3ab4b617693a63d0d6b4'),
-      (425, 3, 8, 49, 29, 'd219166d7f23a0304acfc09c41f042f2f42439c51b023a5d38b720397b05b868'),
-      (425, 6, 8, 49, 29, '7efd4a0b613b97075433521e4ccf1e07932574f2e315c793ca18d8abce783038'),
-      (426, 0, 3, 50, 30, '42aef6b2f0704cc9a73f3c7ef31d4b3c8741715e2628773ef551db82fde22b30'),
-      (427, 0, 4, 51, 31, '8747bd67ec1609e0bc3e20862e249be95db207507d7cfa906f43efc108ef2ff0'),
-      (427, 3, 4, 51, 31, 'de7d62cc1f2d0d7a2afab72567730fb30c99bc79ad7437c39592a654d4d643b3'),
-      (428, 0, 5, 52, 32, '62a1731e9e92e3e5835329dc8eaef60aed5352b484be83141417a545a44baa57'),
-      (428, 3, 5, 52, 32, 'b58207c7d08992e93d78f43b002759f482355eb27912002947ad2e03f1c2d2b4'),
-      (429, 0, 6, 53, 33, 'bed3389ad23bc5e5c78e071b9df31f47d6ddcef57409d308ffe0476818593e33'),
-      (429, 3, 6, 53, 33, '7eb371b31dc92cd1ce5687ebd01c509cabeb6e9633a2dfa7e073f1411e15e30b'),
-      (430, 0, 7, 54, 34, 'c1cefc980a6e0da91b769ecc698354032338abe329535df3c5921eee41f92a93'),
-      (430, 3, 7, 54, 34, '20ca64ee5d22e79d5b88276459834c10522befd345e3adf6ac3757e55b6358a5'),
-      (430, 6, 7, 54, 34, '688bde0750bb2b5821a950a61dc116b569efc777f24ba0b0e0ffefb3c99d6a04'),
-      (431, 0, 8, 55, 35, '99e448a557b046abe60500cdaa69272a3db25b9f5b03bc12a6e0c1e520e14bb6'),
-      (431, 3, 8, 55, 35, '83e5bd8770c71f45bab387a3ea3dbf9b59bd90fa8bb4450fe519a6b89f2d55eb'),
-      (431, 6, 8, 55, 35, '6827ca91cf888b102d91c6bea574f1ed9975689119583bd91648da122cfffe68'),
-      (432, 0, 3, 56, 36, '7534e82a8439cfda4450d46739f9d703e3be99e150078a9e864a5f99dc4f0e1a'),
-      (433, 0, 4, 57, 37, 'e92f2bb19c9d862269b5336f4ea7865c39331e252e38fdc7772421ea38964571'),
-      (433, 3, 4, 57, 37, 'ea6a120371e13e716bf54cf555d2ec4f79043fe803199bf88a3ad5227e2f562b'),
-      (434, 0, 5, 58, 38, '70b3e0ccd15d32db29c39106e91d09d5b261f53de84d15791ae992e63effa176'),
-      (434, 3, 5, 58, 38, 'b83d0e6d2a60dedf9bb11038bfa6b054732bc0d1396bbee749ec12a5a5ce4e1e'),
-      (435, 0, 6, 59, 39, '3c594f8c328d7d1175da5ae771f0224c615f0e39a54d6d09372fd17ff8a7aaea'),
-      (435, 3, 6, 59, 39, 'bb474e3ffe02763ff5d363f4e933c030e299593375419b0bb01191e53ef11397'),
-      (436, 0, 7, 60, 40, '10138db618f7503075915c9e535d6bf051e00b03c4fab5e27350d701df935de1'),
-      (436, 3, 7, 60, 40, '1ce4cf5cd66765ee17d0295f92d497725b550c8b81eee0bc158dae2b427c9f1b'),
-      (436, 6, 7, 60, 40, '16d8a724a2c7f4b7b4734ce0613b3a1f356d01847562baee78c53f0b62bf9548'),
-      (437, 0, 8, 61, 41, 'e7082913f0aba84436da44f6ab33711ad5c30dfe95ebad948bb0ab4284777a00'),
-      (437, 3, 8, 61, 41, '82862844d6f8e1c6851a2a8869c0e3f64f91ef5b01961dd72b64fe9edffb2e08'),
-      (437, 6, 8, 61, 41, '8b480697b3bee51e2dc7d81d9cd43cb85c6ebc40c737804cea09c745cf47b934'),
-      (438, 0, 3, 62, 42, '880b33b60dd625a8578fdec7f8907887599051694278c6b56be2956ca93065c3'),
-      (439, 0, 4, 63, 43, '738b2c1839f8caff573a2b943cfc4c2055022dfffe2ca14b1e4bf1fc59713501'),
-      (439, 3, 4, 63, 43, '12a5f84edcaab2684fa3fcc2b0d1bf640d39ac6c2cd31fe4d5cef9a13c8677ca'),
-      (440, 0, 5, 24, 44, '63ed01a03d8f6f2c7e0214ed30a839f2c8748058ecda9a8bd8fe3b0eeca283cd'),
-      (440, 3, 5, 24, 44, '8d9401cccdf46bfd3d0e7da297cdc8ce91d47ebdfcc3141d2f86ba4ca8323e78'),
-      (441, 0, 6, 25, 45, '08c1116c3e336d26c253d395b6bf50a705d9cf95df61b4a6ff31ba7f13ec3bd2'),
-      (441, 3, 6, 25, 45, 'd9c7bc9ae15c0c7c87643620ad1ff06fd6ff7608c08160a81eaa2f17b19832e9'),
-      (442, 0, 7, 26, 46, '82625ad4e03039605ca2c55d27297507e1591992962a6782f5a7c207f6862e78'),
-      (442, 3, 7, 26, 46, '9eef7d71f874bcf6b73dbe2fa2b9c50b01a302a7bdec049f69e63a13fc29aaa4'),
-      (442, 6, 7, 26, 46, 'd88d22d93fc166b9a690db067734732179d0110c7cae20df7b3f3dfd03734640'),
-      (443, 0, 8, 27, 47, 'ea4eaa71bfe75b63edeb4409eb779fdbcc1938ab9b8b13582e80e0d66bedfcdb'),
-      (443, 3, 8, 27, 47, '64844f4a0b05c415cee91e765677176015a2191e13626ef0c673754f5da08019'),
-      (443, 6, 8, 27, 47, '18bc8aa4de9f294437cf3b4d5e4a8a7b1e343f358ecc02ae8f2bbf7b595ae099'),
-      (444, 0, 3, 28, 48, 'ec884c1f16e51533b6cbf28cf2a53f5ef32802227eead68c35af0cc7bb9a2d3f'),
-      (445, 0, 4, 29, 49, 'f0c452e2980047e84cefe5720acbb7b4628723124c401863858e9112124199db'),
-      (445, 3, 4, 29, 49, 'bf92c5331d23b581bc0b6294c05582a0f8a9d8f5fcf7784c7638664c51294a25'),
-      (446, 0, 5, 30, 50, '6aac3e228e5c0a307184642e58a2ed892995770c6a94ac94c4504d5ff2bfc6a2'),
-      (446, 3, 5, 30, 50, 'fa518577cd93cf7f7d4d798940c2e79bdcdefa091da8b9684e11106586c5ea92'),
-      (447, 0, 6, 31, 51, 'e00e351be33c8ac39d58a954e06059c53ee124dc60f473d1a138ce45cee845dd'),
-      (447, 3, 6, 31, 51, '4b3d7c0f66efb42fde587645df8631a3d0e160c26a1c4ebe2010cfc7661a5357'),
-      (448, 0, 7, 32, 20, '5a55bd501fbacafb179a3d20b1c55f5e1f22745ee2a98314cf83bcd17dc144f9'),
-      (448, 3, 7, 32, 20, '4cc70acf998c3ba82cf6b8b91cb0fdd64e049eccb658997573a6249bb904788a'),
-      (448, 6, 7, 32, 20, 'f7d11b004cb98f7bc8bb036a67c9d60552e553146310b5d195b8f1be95460274'),
-      (449, 0, 8, 33, 21, 'df6e53920ab75df11a0f6416024c40077ecd326a5e9b96e37538c826e42a8ec0'),
-      (449, 3, 8, 33, 21, 'fbae5841fd7b8ff933a58d90ffa0102cd5db7b102d405569ce48229360360d45'),
-      (449, 6, 8, 33, 21, 'fc2743a342ed8ad3a959069f629c0b2071625d9a5d843261c099e9bdf9149ffa'),
-      (450, 0, 3, 34, 22, 'fc0185febaea983531365692c48eb2d79fe7628161aac93f092d3110ab961d55'),
-      (451, 0, 4, 35, 23, 'b42c0ad49507cbca60f04a44e1f028f5a785ea51a37bb6b732fe67004d36706b'),
-      (451, 3, 4, 35, 23, 'f74fb8132ab8c27bd95c9b1a88118874c26715ec72b0292357a7a53a61e0155b'),
-      (452, 0, 5, 36, 24, 'b471cf15884b7ba9ffa23e0ff8c022ecac467841d94cb0323ea78fe63011dd0d'),
-      (452, 3, 5, 36, 24, '0d6f0df6e5faa1897c38581b5527706fe8ceb34380b107b2ffdf8f7931a3c142'),
-      (453, 0, 6, 37, 25, 'f2c17cd151a0a09428d3d6f460bdd5c42be72ba80d63b367ccf17d2c6ffcac68'),
-      (453, 3, 6, 37, 25, '7b35940b8d4265aef69c1397fa3df186381ee3bf28731296b989e097a463b283'),
-      (454, 0, 7, 38, 26, 'e730305970eb40218d30247eebb4ce8b62440fdd7b408b63eda002c4c08fe192'),
-      (454, 3, 7, 38, 26, '076f09df1605f9499cea03c70124cfb86bbdc8943396500a118ee3d407c47ec1'),
-      (454, 6, 7, 38, 26, 'f4673e3d26a30e9ac58169286f0319ecc8d6c76af8ac0f9b74ee6232f0393ba9'),
-      (455, 0, 8, 39, 27, 'de7dfee369a42c3aa36aec2b0e301a8e3f0ad0b9d068e4429a4bef5a3ac61acd'),
-      (455, 3, 8, 39, 27, '00efb86d732d510ae56e14e0234a9021d9fe760d921bdb82f5e418abccb29cd7'),
-      (455, 6, 8, 39, 27, 'e22ede5068125c91ab95a5bad931cfcf0c56614d691a6ce10456ee6acc91849f'),
-      (456, 0, 3, 40, 28, '282b31b880b2365f117dec489874de0675eb9c1200762ff132bc1e10a2a89dbe'),
-      (457, 0, 4, 41, 29, 'c972ddca4e8b8fb477d6c2abf98d38a5b60f05599e7b0bdfe84823087d379b37'),
-      (457, 3, 4, 41, 29, 'f9bbc6509bc394047883d08156ab3d1936d1e37313ce3cb22e8ee0a72b9f3dbe'),
-      (458, 0, 5, 42, 30, 'd39f5a82045a500c698a55085b4ebbeed78757e6422fff640b2365d731ca96f7'),
-      (458, 3, 5, 42, 30, 'e40b89692e65520a541bd25802305234a52c4b323c51816ee22dc308b9919fed'),
-      (459, 0, 6, 43, 31, '3b160e63c2c4205d44eae5fc90713b388ed81122f8c4609809c69999cdece727'),
-      (459, 3, 6, 43, 31, '2743cc13dc75dcde4072ed2783b8093a5d5a3bbb20fe0b9dd184435b9728b324'),
-      (460, 0, 7, 44, 32, '7b8802a8e4b98de60b926f863614d54db8e640aa04ab65984b38445116375af5'),
-      (460, 3, 7, 44, 32, 'd30d5e621e5a32e604d166b9eedbb3f45cf5afaa759c93f42ef70c3d56d211c7'),
-      (460, 6, 7, 44, 32, 'ea2a4aca5739ff0f7bb8e1820baab0483706d8b86dc694954a91ef67141e3c1c'),
-      (461, 0, 8, 45, 33, '01bb58fec72703113531e112284e87a1c496681b4af1a357fb7835bcc4071491'),
-      (461, 3, 8, 45, 33, '1d418f35d71d7503fe0692e91453bb211113939bad78c8b2af51df8a02d349a2'),
-      (461, 6, 8, 45, 33, '27f92bc9e0925d1fd867c69b635ee56c2932752313391027ec6743be4ebc7f5c'),
-      (462, 0, 3, 46, 34, '8a3b2905b6de3e58d139a28d8f3ea83c92f5b4fde46999c74eb7b1c21589be51'),
-      (463, 0, 4, 47, 35, '2c53207c24ec80f16c19b91d49a3609dbd6bca08e2e0233f05f907c6f238522c'),
-      (463, 3, 4, 47, 35, 'c3a093d342912d497070b26c4d0875e4343fea184e123cc5e6f65993cd37675c'),
-      (464, 0, 5, 48, 36, 'e45962d2815bbe6cd4607bafb1dce4a77b0550d2d860da4546f8e4aade6da29d'),
-      (464, 3, 5, 48, 36, '24ef0e618ba4bb48500eda4e57ea5dd9fb7e551eb5313fc08952112984f58ed0'),
-      (465, 0, 6, 49, 37, '7a5bab9c1d2563d282ed60be90a00ec01026fe7f31c58157605b27290653f7b0'),
-      (465, 3, 6, 49, 37, '67cad62333880cbc4ebba8506684723c88a9605cf6069336a817f9bd4fcb189a'),
-      (466, 0, 7, 50, 38, 'ca732bd2a416f921e3bf5ad48ca30485903ac88e3deb09b21a60d2fa8adf194e'),
-      (466, 3, 7, 50, 38, '572f6e6a6601b98cd123ea96f55978b8cf1af51211af73d1c1ef853d5b824231'),
-      (466, 6, 7, 50, 38, '22d65b3d9eb91c6ecfeb232eb4fe15ebd0e1a9911453dd46fde1694656f3f82d'),
-      (467, 0, 8, 51, 39, 'da8f010bafd405d097aea6978f84cfaf91b5ffd8abc31bd116d14a34b8c82f7c'),
-      (467, 3, 8, 51, 39, 'eb69aef1bca5bd44a0cadd99f669aaf34be63b272999b663db62e53486d78c8a'),
-      (467, 6, 8, 51, 39, '92889bd423643d164138da4cb3aa8924a8f6d08fab5fe111c1e5262dbe92534e'),
-      (468, 0, 3, 52, 40, '358c43bb86f04c97304fd1efad4532d11c22d3291a50c5405642be87f14ac4ec'),
-      (469, 0, 4, 53, 41, 'b42cf1f6fcb6327a61acc9d2533b9c0201afda6188add38be2bb47608d2aa609'),
-      (469, 3, 4, 53, 41, 'b56dcfe0541cc71b62c1704aafb106804509becaa430ead6765f3a75367efb89'),
-      (470, 0, 5, 54, 42, 'e4764fdfa04fcb3d0384850d74b98934c58d79e2d5c90e8f04473685053abb11'),
-      (470, 3, 5, 54, 42, '6cc630565bd0ff7afc7aebc6923fa820d3bed8d577974fadf8c4d8e39bf350a4'),
-      (471, 0, 6, 55, 43, '112d8f0dbaddfed9d5d710ec55cbff57d1f2563ee4309d67898499391e7a4470'),
-      (471, 3, 6, 55, 43, 'ed92dc1a395c6d8390dd0e9386978a51bbd862960c67ebaf050910855cfdefe9'),
-      (472, 0, 7, 56, 44, '0e86f3ba0a125fc439c3db1b2fad975608bb0803e59bb1159a6217e90cc18e06'),
-      (472, 3, 7, 56, 44, '7cbe4cde997a792b1f6af4d064d39aea4ef116c1a67de6edcb9d98760927cde3'),
-      (472, 6, 7, 56, 44, '6413330f5f6cec4e21fb8a66b389b8679832506c570194af0b60bbce96a1cfd3'),
-      (473, 0, 8, 57, 45, '38b8efc2eac5343d2feeb985a37e3a5a32668a341eba073dcd538e8abd96b22b'),
-      (473, 3, 8, 57, 45, 'b68da6711a8366c674ba5e3906cb8d5a3dd30e3994cc49792f2a778da84edd31'),
-      (473, 6, 8, 57, 45, '7f459bfcbe8483ecc8c9bb9c11333cdde6ad3aaa525b016e8279226e53081728'),
-      (474, 0, 3, 58, 46, '5b4dfba09a45a274c8b97b6e7c4c29e88e51819528b7f97983f07d9eee59d6a1'),
-      (475, 0, 4, 59, 47, 'a1021c2feda1fa808bd4f8b1d1c63626505e0049eacc861e5e2373afdbaae528'),
-      (475, 3, 4, 59, 47, 'c7979406a4cd45f71340137514b76d6362009b427330db47dd8c5b107b5252c0'),
-      (476, 0, 5, 60, 48, 'f8d4de0309e2d5e6673fd1133ebabcaa44b5951432a36045502a1bf05a8313db'),
-      (476, 3, 5, 60, 48, '29e13a79983feda979cd6b8b302b6fa0ceda9519477ca3884ed0a5f037b3f3ba'),
-      (477, 0, 6, 61, 49, 'e779f82ad05709d5fff9b1f690f2b57159ace8d3c32271d9fa15db252662bda4'),
-      (477, 3, 6, 61, 49, '1a3a3ff77589cdb6c42518c3e1ca042aaa6bd58617ee94c28bda527c2a7fd86e'),
-      (478, 0, 7, 62, 50, 'e70b0d6e4810b2bf7b4ab7c169cf5438df7c8ddf1c3c329719322cc5f9b9be75'),
-      (478, 3, 7, 62, 50, 'd2a5ad79e1bd1f0544396aaafe1be1f05fcc46bc402a8feb1afc509e13bdad36'),
-      (478, 6, 7, 62, 50, 'cc264d4d5f12560f3c6f4d5e3c09010d88742287fdd526ba9fb287eb1f82cbc0'),
-      (479, 0, 8, 63, 51, '0a567b0591931410ee009634644c39b80d9a60303d11c7a4114989660085abeb'),
-      (479, 3, 8, 63, 51, '7b005d54dce7a5ce805a9fe96688d920804218053f4e3c56d31e86106f49cf16'),
-      (479, 6, 8, 63, 51, 'dc42b001ed8cd7760de194a252fa0897803c38961f7d6a5f60082feeeb3fb445'),
-      (480, 0, 3, 24, 20, '3f29217ae36b7bc9d8a7d65a08f6b18ea848b1d34c9539bdba7b75643691f8de'),
-      (481, 0, 4, 25, 21, '30aa87a5a8fb4da8d340e627699d0006df997283a6595d9c3dc52dd3de89a7f1'),
-      (481, 3, 4, 25, 21, '5894705303427225f8251a6ae52eedac9351759ec0b58606a83ae12153bfe6c5'),
-      (482, 0, 5, 26, 22, '5d449f98676c0dffbf870252eec32fbb01bbef469af8aee4f8b1033aa30b3bed'),
-      (482, 3, 5, 26, 22, '81f54b10b2ffcb14928546ef1834a9027be1ec881f99d55a377a4e94e0128faf'),
-      (483, 0, 6, 27, 23, 'dd13cc19d37e73768abd908c96bcc50b0bbec8ef2784372780abf98c75ffe777'),
-      (483, 3, 6, 27, 23, 'aade6935f885df1d1a253a346a13c6f38c9c5b06918cc883e3d47f8f5fcc853c'),
-      (484, 0, 7, 28, 24, 'dc483e294b96e23901b5ec015146638542c3c22f7e61de157d2cded50be66ee7'),
-      (484, 3, 7, 28, 24, '5e9d388dfb1b7a63796fe36dd35dbd86bf836796e97572a90ff788c908826506'),
-      (484, 6, 7, 28, 24, '80f3d183e93065fd54fcef4b31b745ff3200b3cd9d0217ec5b98f898b8a9b674'),
-      (485, 0, 8, 29, 25, 'd1f4b2ff27fa084da96b770f9a0c6d8aa0dd5465bf04fb55de11cf675689134d'),
-      (485, 3, 8, 29, 25, 'db929ce57ca6dcf280dd57b7185e82d7b4f5de8cc99d83f9eaebee76746b196b'),
-      (485, 6, 8, 29, 25, '90c6ac03bc1616020da874a72ca5f1154f78f61a1927636018e8d18d0d76ecb6'),
-      (486, 0, 3, 30, 26, '210d785f9018815c141ad98ed6c11a3397068c65cb9f1e3d0032908f29c0d9c2'),
-      (487, 0, 4, 31, 27, '04d8a92d8e058d674fe891544a695c98f537668474b8a8658401dcd29bacd877'),
-      (487, 3, 4, 31, 27, '5dad82f9781ff46af2e33adbb6a80f1a9f92ccd68042e205c03155b30d6176a6'),
-      (488, 0, 5, 32, 28, '04fcbf862391e7c653737e86ad35b3a8225f330e146686e2ea8c24ffec3c2cbf'),
-      (488, 3, 5, 32, 28, '72702af12b4e8fd6a56bb9d2f62942553fe4899ca42af5c12ede796580a4c015'),
-      (489, 0, 6, 33, 29, '9ab8908ee098ecc9290b659b566320bd480eeddeb7fb27b0c22d87568d80b28a'),
-      (489, 3, 6, 33, 29, 'ab43098e0c1952c3892e5ec480b0c3b6baf57bfbc67b6878b6e64db77f6b2498'),
-      (490, 0, 7, 34, 30, 'e9d517834235d351f6efb33ff99e1d724f70f365531982ecae00927be0f11e2e'),
-      (490, 3, 7, 34, 30, 'd8e29dfaf980fc2f64f533f8f61708a7048be15dcc10d5f80a7827ce54d6fcf6'),
-      (490, 6, 7, 34, 30, 'fbb66cf7c276e171418f30641fb25aca1f169e584f72002009feb5439190a985'),
-      (491, 0, 8, 35, 31, '3c9a486aade0be45361eb00a933f00f553fba02fbf0f688e0a59448f0d988d1e'),
-      (491, 3, 8, 35, 31, 'f5fea4490c08892892530bcdc48a047e49be4ef43b5e5ad6a68c09cb218b2607'),
-      (491, 6, 8, 35, 31, '807f2645967640b9d690b8822ceb02c3ca55de3dce8b65c259cb1a24a560365a'),
-      (492, 0, 3, 36, 32, 'abbe4e7f675b4972c0f20a228276981068d6adf588d5502b95fbca8d5ec14661'),
-      (493, 0, 4, 37, 33, '59097e01fc2714a0d7e0deed5e17fbc2e1c9ffb2c2e5d62c3f58f32fe7ea27c8'),
-      (493, 3, 4, 37, 33, '8e6f7693a084aa028100f9778c6f78c8e72ed4bc167c357491cf0c5bbe87d3f9'),
-      (494, 0, 5, 38, 34, 'd80a91b2d0f4b7735b10eb820d1adeae0f4921167651f60a483c6e3fe21f1133'),
-      (494, 3, 5, 38, 34, '40e3b61ae94eff3a51c59136f7810510015aaf545d534c7a87e531f94c669116'),
-      (495, 0, 6, 39, 35, '1e774a8105bde9c360e923cb9a9369bd45361701b12092b1426e3e39965a0d0e'),
-      (495, 3, 6, 39, 35, '32bb839479a9222323655990c56b9fe6486d8ae4db565fc1bbf333ee93056225'),
-      (496, 0, 7, 40, 36, '247a0990ccf0c0bcda4a8639346afd91a51f9394c721be383ca8e85cc8990723'),
-      (496, 3, 7, 40, 36, 'd39d750ab288c8311989ff814f8cbe2a0f0c913008f2b8a5fbe12b500ab0bfbb'),
-      (496, 6, 7, 40, 36, 'c663432ee3b27a4525b73016bdaff314af793d801c61e8f2ca7ff10fb2cba313'),
-      (497, 0, 8, 41, 37, 'a51bace1e65013ac3b4b18650d63e73475af4524a7905ed14a8e709671ef3fc2'),
-      (497, 3, 8, 41, 37, '27a0bbcd564699819ca50998cb41b990c37db9d2fcb2ea3fb8c3c54249902dfb'),
-      (497, 6, 8, 41, 37, '12e79db6281558cbbc277c8736951c6e4548e1c1d6eeb10161bc51410008e570'),
-      (498, 0, 3, 42, 38, '9e1184aa26c700511ac6aebaadfdef0e966eb4e970755140abfab8b730d25080'),
-      (499, 0, 4, 43, 39, 'c08acc5e986682b989ae5dbff411c05cb697952fc96966a83e5e6beb1c3ced3c'),
-      (499, 3, 4, 43, 39, '30670f0f3b3e033429a399eb5963a4dd9f0d1deec413641bf18fb82b0801b16e'),
-    ],
-  },
-  'q_pdf_images': {
-    153156: [
-      (0, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a3fa94671ecf1d4892766c9072f7cd01401cbf55e8e46ce2cfb7180a10db934a'),
-      (0, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '5b439ed9c4e9c15e87bb74be996e3c30e944c91c6c3600f43e17c47bc6debb46'),
-      (0, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f64ea8f9c3b6ff8b4d72e73d087742e1f3be432e86bf19664f4e28e71877ff75'),
-      (0, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (1, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2fd1b4a0fe639d76d5ea105a0f910beab0d75e337d5749c4e7c47b90bc01d0b2'),
-      (1, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '4fb1f6960a9b5a85597a60f6d0774091c8cbc20a43d68a254b9b394d3c6b3cc6'),
-      (1, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9e6f2c407a5446453900d63c92f2d03351c9f519c541ca60afd884a2db7e0f6a'),
-      (2, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '28af62d5133981af7ec2b46802f8b2558990596b2a12a923c10050b290faace7'),
-      (2, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b954748b80c34b29479a7e91fbc69b477ebf050e2f08f25d5d5cf8e895cc2c31'),
-      (2, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'cd00e292c5970d3c5e2f0ffa5171e555bc46bfc4faddfb4a418b6840b86e79a3'),
-      (3, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0b7d49f12a093d1e67fe0e9e16ebc69f1e179abfaaa2d89671d68813324be057'),
-      (3, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '28e520ae9219e3fb264050ec496d3ccfb6e4496f9ba1720d9b9661ecd2f7c844'),
-      (3, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '0b7d49f12a093d1e67fe0e9e16ebc69f1e179abfaaa2d89671d68813324be057'),
-      (4, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2bb0932afdbed5a4791fca5d394f5a1a916b49444b13038c9956bc16d8a9a39c'),
-      (4, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '80b43383057472d51cbced611b900471da9d79a29078c12138d45eec4e8f7520'),
-      (4, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '301fafe42b1a66d4f7b7b3a72dc90c5d877ebfa5c6e2699e708723477981f309'),
-      (5, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '028b1d4baa3bb971cb43380170e6a8bdd7806c08a396efc96ef630bbefa4c724'),
-      (5, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '16baca4463eb6fca8d804681ba4bd7f660a6102e3bab15f748008660615d68ec'),
-      (5, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '58af3886c63eb03dbfac11ec3f8159e3e11e52e863d872db41b225c7a0d3ea19'),
-      (6, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5ee5447f1edfe18e60f2104db8ad806521cbd4452138d160c7d6592724696f66'),
-      (6, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '9a81d9a475fb5f40636835452266ad1112393cf6ae632fcfc60ca7ab1c7fc522'),
-      (6, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', '17de5fb66f861221f759500e65b03880a45eb00791f4cc94d8021c3f6161ba6d'),
-      (7, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b250ff8a7384bdca729cec8a5f23cb8f7dbb1b2414e26a92bb77db5ccd02684c'),
-      (7, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '7629937d48720d96ae8db463eca03dd426c6295ca30e6653e86f3d6c83806ded'),
-      (7, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b250ff8a7384bdca729cec8a5f23cb8f7dbb1b2414e26a92bb77db5ccd02684c'),
-      (7, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (8, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8b1e048d61af4399f331314e10ff9ed9a91bf8192a6a5cbd34a9144f56f30b2'),
-      (8, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '1d9278c8dd273adda005c80e7f10a60f53b9afe0851f31e56bbc2a9f4cc56763'),
-      (8, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '760db7cc521ebd55d55d1282095a40ce7efc9e36a2dc36d7d24dc12f4657864b'),
-      (9, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '382509d808046aa416cc02a843dffa29448df7427b2081ad5a54bd07dbab9457'),
-      (9, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '0d0fb8019dac6a4dfbce43c5b422a797674018960208a5b3c8ca6ee9c4dce407'),
-      (9, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a1f2db97133c0b40a28bdd7f8b50ea966b94bbaa8e60dc7b6ebea13fcf44a9ee'),
-      (10, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ab10541e0ddffaf3b9793cb569f4d12883e6ae398de87d243f829743af2b1065'),
-      (10, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '3e5d967aaef8efc87355c3a4ed1ce282438e5426ba1e696c56f063d586faf6d5'),
-      (10, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '89a14aa976d55c8331acac10674113deafa817db1b2ac3ae6337051b32096c10'),
-      (11, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7da68d56af53b3ef1f3e07a13bf3d96a61dbc70742612af3c17e44be3f0f9665'),
-      (11, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '148729f0c8dfa306d3fb7d4aa7effaa649f9e27358001868590b22d35bf41492'),
-      (11, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7da68d56af53b3ef1f3e07a13bf3d96a61dbc70742612af3c17e44be3f0f9665'),
-      (12, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '82fca7ed9fa53b5ae5a1a8ba96e88da9833a9ae6d5a6626c690a31710b489b3a'),
-      (12, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '505d42c51def6f10787cff8920ea04a7ff27893b65b45720a0f78d6971131686'),
-      (12, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '02db0c642088ddc8a046d987aae6ea4200256ab7ec3a3ca07435440e5f9e3c48'),
-      (13, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4a92c7f8b6da0145cae4c5928e882dd295fe0a6b3a39f5e917563b3b4a0f88fb'),
-      (13, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '9b24bc9874dabdf35baca253334ad96176264d4260a69b29afdbe6c408867944'),
-      (13, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e25c732b4242ae6b651d67dbfe3e5ad773af917f0774b8b7ba492079e1148bec'),
-      (14, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8796b0058bcb9ed58524b0913efda8bdc9e7efc4f7cfa79350e907d4529949c7'),
-      (14, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '6ad9641605d2a653cb0961128b8a6b20f01f7a03bcadc02f34da450e529ffb73'),
-      (14, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '9c630f353493e06d1dc22403ae59d250d96ac91850814df60029a5f679a6e4df'),
-      (14, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (15, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e18e872017781c003b491c0e8271751b93824cd3fb5236baf47b764a27b14d98'),
-      (15, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c2e784a7359933956d0336911adf2b102cbe1a5e47f9771825b47ae359e14199'),
-      (15, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'e18e872017781c003b491c0e8271751b93824cd3fb5236baf47b764a27b14d98'),
-      (16, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fd4631fa28b6eda9a624180558f4db60b3f1df8d0571953b4fe4e49671416da4'),
-      (16, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e0439eb1b05df34129483a74487a7837391894cff21d68d86bdb90bf4627bc87'),
-      (16, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '521109b142ccaac7b581e2f7e269b68229872c763b05714455ca3d6bd57c0f6e'),
-      (17, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd9426628f4ef3a689b1714b105a9b94456a4fea820fc1e2666fe37c99b0af6fe'),
-      (17, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '8fde18eccf7a1a5394d4db2e60c628222bb70edcb797d6d1c73f4634aaf8832e'),
-      (17, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e51e465e928dc9ab7e0abcc150549976420b5dc0f6c15e8a29191c369ae7c82d'),
-      (18, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '332c621486dec3b3bdcb2dbc376cdd9446d3a6009c068d84185fc2d2211f59fa'),
-      (18, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '6b2d160eebe2c6f2aa46387b945fc004b158a22742e38bccf1016e724f2b6bfd'),
-      (18, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'ecadc643c6a01df0ddc5cbc5548313634045bfd1ab21a99845146a4dffa2341b'),
-      (19, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7cd7c3ad023519399b57cc02e8d4752d961db2223b09a98af2ff3afdd01a933a'),
-      (19, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '1816d6caa82bd64684aaa6e1528644c630fbe045e7dfa4f9d1429d2c192cf967'),
-      (19, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7cd7c3ad023519399b57cc02e8d4752d961db2223b09a98af2ff3afdd01a933a'),
-      (20, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cf0e85371b034d76f66b29787dffe3dc5e6c6e01ce1253bbed145af1ebac4964'),
-      (20, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cb8e0ca612ed530f2872a4fa62c3392fd3f748f72c3cd7dcf069a2399e9fac09'),
-      (20, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '47855ed9169224a6b432a5a1b75b9d2d4e67b10f62551a4050b6ba36b2283ce3'),
-      (21, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a00de6f5b3c6d4db2d7ba4cfe03921473a108d42c1728e76d97aea24a00bc9a1'),
-      (21, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '32ef740d48470638720aec42880a7df8ff0288d2bf8cf72d7123d2e1b7bb1840'),
-      (21, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ab89ef5edd6aa47e11764f1ae8e164940b677baeee4c720481de856a58036c55'),
-      (21, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (22, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8d69fa8d649404eaeaf5401d560b81f478f211118f747b88b2f21a4beac21abf'),
-      (22, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '6060726a9b1e9c7626873f04842f4fb00a1fcb792e82ca73127cc7372e699540'),
-      (22, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'fa807c957eafe34b850cb453a096df2e5899f0902a837fccd59f9aafa869fb44'),
-      (23, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9ba23a0b74a5a4d2b708bd9656d7b99c46384867fe373c28f645300ddcb1e7aa'),
-      (23, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '282324dc8f527407567902ad7741ff540a7300bb910db1ba8b9b17d8750d3f00'),
-      (23, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9ba23a0b74a5a4d2b708bd9656d7b99c46384867fe373c28f645300ddcb1e7aa'),
-      (24, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '16a865d60825ffa6db87cbf65e996a4a259706f13caa878e9ae6c2d589a0d47c'),
-      (24, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '60aba18b4676fee9467732767e517f5942292f51c3b239476f9fdfd2d2d544a0'),
-      (24, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '044e949e176b81daeb857c0a6cd0061aec7378f3ea3c3e5b7db8161db4a6885c'),
-      (25, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'caea973302c16bb7b14784f525c4c2dab3fa0de7b172b7e143e0dc537d2a5beb'),
-      (25, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '27ef03b1df702e8eba4607603680cbd2184aafdc796a419ed908e90cbb666a5d'),
-      (25, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '678fc945104cb239cd6e27af8c79f3a310845e3ac0ecd772d49351661b1e3acb'),
-      (26, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '335520862f6c8c92db7ca427450aebd22f523d364f7745913ce8e4ac6336d770'),
-      (26, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '6df4268f298962cddb7845e01ab675b5645d749e2edb8c521babc7ec82a64c51'),
-      (26, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '7203fb8598101915cbecd0848ac0b37a76f3b651a2b51e0c9921cce07d23cda0'),
-      (27, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dc6a893d463be6ae7e567eef783037faada79d010367a1ff86d9f4efcf4beff4'),
-      (27, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e131c0e7561a9c767148eea6525dd1819916269614ca9630de2cc2185d22966b'),
-      (27, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'dc6a893d463be6ae7e567eef783037faada79d010367a1ff86d9f4efcf4beff4'),
-      (28, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ff4f38a53d54d0a9a375b435cb870acfcfcf18b4d9b10d157dab6c73084ee0bf'),
-      (28, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fc9b0e9ceae502ebf262e82fb6853bd471e9e07986d4009c9134461caa82be07'),
-      (28, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'aa7054fa9d291183bf84b3a731491f87f158833a982635c7e8a18c76cdf9a178'),
-      (28, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (29, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '12698f2fd969a2833b59f8e7bcbe65a55b2bfa7bbf2051002b17ae513f7043d3'),
-      (29, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '8e6d35a1251f940519f5a54abfb3519c49fdbd14352ccc4004829b3b3e605815'),
-      (29, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a8d4bb5dac1eda077210b5bee7207864a89d76ac5b5f118d47d270bf084a479b'),
-      (30, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f85338a479f2d8ee203850471a8a9e6bb8111bc2164e190b6c31a104bb05163d'),
-      (30, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c49f8367c3e97185c55bfcf6422ee16db95e1dc9b38027645b18f594efe166d6'),
-      (30, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '21440d733d041493d30a2feae07f44ce6cfd2f544e16a19beab03d6248c705bc'),
-      (31, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3d9bca9b5d749ab97ca4711aec57357a8c3ede0f3574918c34a6bf19d8cb88a4'),
-      (31, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '8d16f81e4c31e2a684db46424df413f9d798b2a79d2921f956f23974d1037dde'),
-      (31, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '3d9bca9b5d749ab97ca4711aec57357a8c3ede0f3574918c34a6bf19d8cb88a4'),
-      (32, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0d74bf475225200c7fda8d196320abe85f70e2b3d8e998c583bd0045bd454b86'),
-      (32, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '5a368a8c3e757f0d557464ffc811831c4fec4872c5f949c775c0bbef4600464c'),
-      (32, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1c473d796d85b2c4f499a8309ff38d0c2ba47344db1e66472fc2d05a26685bf8'),
-      (33, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9258cfa97f82db1a872d057b031b292b02095e2ef6f42505a4b4f0a3cd5b530c'),
-      (33, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '79cef904c860aef24ec0fe7717107b7b6717b442a38a19d9331738a36109dbf8'),
-      (33, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '71a1355367c106274bfa20adaa22df31a0dbaf686a5fe4c6470641958e825532'),
-      (34, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '22b293a346d30d940cdfd5229e9d9c24f4c324921e34758dcf2d135ce9b27b95'),
-      (34, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '644f32a2f28eb98a00a108a6a7cfd59330cfd37f96823d98f089cf86a2e83999'),
-      (34, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'de1da8f3791deb5ea5a11c9a67179b1e240aa14979524a3cc28add0e3612c0fe'),
-      (35, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '016248be8685b0616ebd162400133374266ecba10a5b7c45addbde521ab11721'),
-      (35, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a757b4565fe88b0f9db0a86ebd2cdd3b46cc29fda7b41998c321d1fe37adab09'),
-      (35, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '016248be8685b0616ebd162400133374266ecba10a5b7c45addbde521ab11721'),
-      (35, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (36, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '74f37524ce50aa801c47b80c61d80e5887cfebe807db10b083fb361a424285fa'),
-      (36, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '4ff9094f5f61c446ce631616325b74f3f6cf3c3a7cab4bd33ee5008dc8cfc38b'),
-      (36, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '60d18ab6e7182b789f69dad23363ac414665a6c5382712e421cab17f407e4fec'),
-      (37, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8a249346d10427133ca02abeb69530d04202a9367e347ce99f765dbbc62b9227'),
-      (37, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '578763a2ddf7b3767fc3a1246a257cbb9bfae83a08063ac5ad51f5d1aa901e96'),
-      (37, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ba6912037458991ff289fa1cde25d16d8640bddc41dce03dcb71447b57e7c1c7'),
-      (38, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '32a920d7fdc753210088c5eb9cd600cc34afea8c7d8fa48830e9376f75974f33'),
-      (38, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ecee444a2751ef46790d67b2d40c94282398e27993db022d1c58a68237d17675'),
-      (38, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'bfcd467ade68caf16dd7980d632aa24fe42168609aed073a72526a6c3cc0fa3a'),
-      (39, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '36f51ebb07d5049ce92a313961c50e36306e261abaf6abab47264f5538d3fb6c'),
-      (39, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '729adc3139c8cae66aaf969b3c0df7fda992e18451c41fee1b296f72bb3e2510'),
-      (39, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '36f51ebb07d5049ce92a313961c50e36306e261abaf6abab47264f5538d3fb6c'),
-      (40, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '486e161868969b7720aad0b045c33ba26e8a57eb28fb81d38944d575dd65e775'),
-      (40, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '70526ce44ceed62317ba8e3b71a9f73f6af3055504b56a4dd505f37081c73915'),
-      (40, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '279b6e5f4a29adbe3c8775f3b316119c882331b6bcca64f69a9562ff756c4979'),
-      (41, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a569b51ea23cf85501e3b039ec0b3e16081bd9a7e66c22fccc09b24c7017576d'),
-      (41, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '949e524005c96d5c61bdf7c0642bb70a67de9bef4aa69e327a9b864f21b4190d'),
-      (41, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2a9427d054b0473673194a328d63ddaf3be167f4c0ef7409d8c30ea90d287690'),
-      (42, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cf19aa624b2a5ef1ad94742c94ef6b3baf8ccc36a1e8a3b645f9c012c5a0418b'),
-      (42, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b106def6ebb9108efbbc5dd62fe140046fa08eda6c2979248c247ed3458e1cbe'),
-      (42, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '33af8be68257728c6fa8ab5873afaf7d20ee22823630f476494ab7a8446a08e4'),
-      (42, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (43, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4de03c996d4c0f8c116e101b5c8c74b7b092bc7447396de2f5b59bfc75a2b6aa'),
-      (43, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '85db8353030227cda7932c644eff285a7cda6c2bab13f3a66b96d994b2ef13b1'),
-      (43, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4de03c996d4c0f8c116e101b5c8c74b7b092bc7447396de2f5b59bfc75a2b6aa'),
-      (44, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '262c8612ce6685209791943f9b89dcfbf152b6ebb6ae84b5813260dbd4ef5cde'),
-      (44, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c517353f72fc4a473f008dc4a09f0d9d3844a06a4926cd367117e132edf7b2e3'),
-      (44, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2ecfda0a38af4bc6d7cee0cf4140555bf02b495dc6124533f8df08e1413af27f'),
-      (45, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'adc2d586132b90d5927444bde0bfdf508bf55f0e58e5ef09926eb0fe47c888c0'),
-      (45, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '254757b921eae624aad462558c45eeeb231f706c36c9cafb0f3b9f00f8708188'),
-      (45, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5c8d4385de853da6d0849aaf9c0548ce930fae08b6f9046901af0196bd355ff6'),
-      (46, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0f19f8227626d5c6ad0980a2469bdb181996478d9ce885ff1acfbdd895e0c9f6'),
-      (46, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a542d95de4e5d50194173d379449dfc79d93ccf64b06f04319477f75405d64de'),
-      (46, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '1b05b094184b250873b5ca507d777253566539e665fb2dd806805e43a40f9386'),
-      (47, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b3314792fcd776a7d9d7295ed6cac8cec6cb90e0ff6948e1e009e3ff4a5bc811'),
-      (47, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '89b1002a5f47566b701c4a1073b5cd4e006af4b50fd346e221bb26dff74f6f77'),
-      (47, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b3314792fcd776a7d9d7295ed6cac8cec6cb90e0ff6948e1e009e3ff4a5bc811'),
-      (48, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '26243b3d543b3e1dc98db575dec057d53089b5a00ca135858d42d59d7dd3c255'),
-      (48, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '15bf4e69db09142a451ca208a511e493018833319e6f0f4667c0704019be4e54'),
-      (48, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'af49cd302c4b05e3e368549ac948fcb454683f69c32e147c3734b0d448d5d84f'),
-      (49, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7fb46328061e9863a54dd900a35862f6e027678ba9aeb079bffd53f23561d040'),
-      (49, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '291e42f6c6686cce3255eab1c98f17ab90b68968bebd56cd2fa934676ab67567'),
-      (49, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '59a4b31cfcb8d2fa5a50b2f8241dbd3f950ca46190d939b59ccc12e5a3ff705e'),
-      (49, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (50, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '146ac8a5fd24a257dc1890b1b04a3bc186945283115418e754ee7cf576207447'),
-      (50, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f84a9ca1529a1fe91dcb18dc3ba463e86addadbe59870360083119c9c698db81'),
-      (50, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'ae0d2b9a6cf82254c861130937151ad3c28abf8e0d7d6a1673e76a5d93647e52'),
-      (51, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1de26423461f625890f7166b6bd0ae29d9b35958601f6001b7b03f4e2f545189'),
-      (51, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e5f1ab6a45dd0f9dca3acfcfbc8407f32e93667efb5114d4793f137d09fbbada'),
-      (51, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '1de26423461f625890f7166b6bd0ae29d9b35958601f6001b7b03f4e2f545189'),
-      (52, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2aecc580fd0f5027c29aa1b9de75ff567aa3b514435e0948ed8e63640d0869bb'),
-      (52, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '83953612b90109ac3fc801849538dd93f8d73b4f1dbefdb3e908e0d89a7a56a8'),
-      (52, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e2852d52d66e870d95691da51a3bfd299fa9e2d4a54d8cf992bfaf92d5b76b5d'),
-      (53, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '13892084121fa9c3ce5c83aab31360ceeeba812b8573f7ec24eba0355b05262c'),
-      (53, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '08c4ab396853bdfd96c587bbedf6fe09bd083dacdf86e72f4fa870493c5144e0'),
-      (53, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '65afe0d84a0aa6945492fb485f5876b464bff3f58eb7785c128ccde9e745fc57'),
-      (54, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '17eabba36b6a443c9ced218e7ad239951085589467bab4394df26c4df8391bf2'),
-      (54, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '36833be227eb184e4af958da97154e3056cb5526464300b0882ea681cb244442'),
-      (54, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '38f6343f1d5db257ec32cdbee5a557b7047dd049e1e3c45ec16cec01633cc1b2'),
-      (55, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '77ca22c1e0f1b027c013bf2baebbf080c1ac535913ffc27d17f1594d3e58307a'),
-      (55, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '948472b6d96049a0263e49620eeb438ac30ad3f933595b7436b07a26b87acfe9'),
-      (55, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '77ca22c1e0f1b027c013bf2baebbf080c1ac535913ffc27d17f1594d3e58307a'),
-      (56, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4c527d06fe5024a1fdae02a070d9198ec6ba2b646cb8c28b0ccc6e8942af976e'),
-      (56, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ef36f9627926865ba749fe2240646eb4d164bb037c3b6827a85c85c9cb42d179'),
-      (56, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3eebf8c2902dbe142cca9920144a6da42ff979af9e7ff08ee9eb700ab127785c'),
-      (56, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (57, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '41ee81d619594d2646e9f88b9d90f17e26ba203ec454ed2ad322aa7664b18c5f'),
-      (57, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '6d2208e0fe54f5408a96d7ed9339d2cc7e7abac5b40725176ef8987862807f43'),
-      (57, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '95f5fb2771cebe71277e09bdf14b14b51351fe504c85e6b76d43456ecc2ee831'),
-      (58, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f33da9326cc765465f9f4bf811c4801f7dee2beef32fd538fa296c28b7e41b18'),
-      (58, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '27e002f23b84a7ab91b68d475857484c2d768cf89ec3bc04d92b865b323677a0'),
-      (58, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'd7f7971c4d52f2d643545daf4702c814b2d5839e651aa2589f5f798700f9aa66'),
-      (59, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '459cf7c2c66cad135691ac85d106e93525fb87cbd476d251737c6b966b1fc6c0'),
-      (59, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b67a5659beecd27706143a6161278e9b674b1a287e41a44886224bc45878b7b4'),
-      (59, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '459cf7c2c66cad135691ac85d106e93525fb87cbd476d251737c6b966b1fc6c0'),
-      (60, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a27e4bb5c58f98b8915263425fd6297613dca78e43c519bfbf7f7a40ec2ae008'),
-      (60, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b3b8ae3022ed4e95bc569abf2007d70b2322eb1064be15adbee82e556ae3ecb6'),
-      (60, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b1e609231ce5181477c7c7fd500dff6eccb714cc77a931fcdee06702555f63da'),
-      (61, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0872b07a4a69eba3cbdb73bf86416a07f2833f0775f8e14c0d86ac1530d57670'),
-      (61, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd5f3d3b0f78a09e5358b5f113a6fa7b694dad8973da874f957a01d2ceba77319'),
-      (61, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '83b152ab44e6dfd7f1bbf3a7a40be9b438ed40dbca74032d9656290e3eda89b6'),
-      (62, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '468cb2212ed3806b26ba51a64c1b7a937ea2cf9ea39ae93babc8aa10971cba4a'),
-      (62, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '97315ed7fcba999b5416aa587150180ae6d53ff73fe2b0db029f1288abe4f182'),
-      (62, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'cef5fecf2618a3bfdb49b7edd748eab56e8a72ab794661e1b6140fa58536d14e'),
-      (63, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4579ab12560ea7a24212de011acf627e68cd5c91034fd4ec6aad9ea6a6e070df'),
-      (63, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '028a40186ed56a89e45431421d20592755215d7b8558c36df3a2037d6c50fb7d'),
-      (63, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4579ab12560ea7a24212de011acf627e68cd5c91034fd4ec6aad9ea6a6e070df'),
-      (63, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (64, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '769855bda1cd79ff09c32fb8d873beef2fac82ff45fdf4d5de632e49fd8efadd'),
-      (64, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b5a180477284e95cdc94be026fee875c2e84807de8665901f90fd7d7ba57961f'),
-      (64, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'cb0bec4678d167fc4e439cc4720ad570deeeb411b7058d42900cfb8ddc73e65c'),
-      (65, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dfdf860f41fe55d14fdbf1ec8ffe67a2a4f54c935b990553b65c6ea30b5fa8da'),
-      (65, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '1688cb22aba8e4530e1a33e1224cc7c1d5e2166efc0b053576f451623193300e'),
-      (65, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b8f3ff0f879c3b9105a8bed337a28341949461da6cf707bd7c3f6fc160aa4651'),
-      (66, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5e7b7db06649335fc0f95bebf75f8ef47ccdd104805a0e92b7c07197883b1c97'),
-      (66, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '4fdf29b1ffda0d6f9296820bb86a51a1a5cfc353342367bbc4eb35137b94d7fd'),
-      (66, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '9c0095c04ef53d9df41602f3783c90ef3c3e27cc9d0b38262d23930db6313f5a'),
-      (67, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '53e00cc03eb6d71f0a7186e0fe4638bf1b0207cca252140940a0c0c83133c9fa'),
-      (67, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '72281f33aae2ba7df86342fd9a0ebbc3d0ccdd3df310c768971e837e2a9639dd'),
-      (67, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '53e00cc03eb6d71f0a7186e0fe4638bf1b0207cca252140940a0c0c83133c9fa'),
-      (68, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '337a9c6477153b91b3bbae815771b7f3e2555b213abaf9d65592d4b33726c373'),
-      (68, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '431f8b6c995492a7b3e9e27757d6b45e80c4657ae2e0fde9e07685b1a5fc97fe'),
-      (68, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '03dc156803e3e218dafff05ad7b2da2befcd1c58da212c1f8a99e0eada19256f'),
-      (69, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bd711a90382bf36dd6ec15e8c5b0c786149f3ad4dd8ef0f1353007d7d8ef57d5'),
-      (69, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd0a9d1a6dc0421cca6c0f180c38f35a890118c6c2d3aa9ac31fe459dcc92d94c'),
-      (69, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1698d1f12f77787b32a9481ae227956d2e55ab34c980dad720f7cd359496c35c'),
-      (70, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '43800db36927927a142e4bfedd4a361bcf31ab299cc7496b31cb93f0dc1a0fff'),
-      (70, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '04e8360efb7f1d542d4b5e86b73aad6b590c3704fc6f19857800f927ab85f275'),
-      (70, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'c2d5716e36ce6629c6e54b86ad5ea0993a1f09e9614f48f86f621993e3dcafe8'),
-      (70, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (71, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b5c60b85a9d6abd3b7bb582a73bcfa507d460c6ca8f1903bb4af8eb31ad2b10b'),
-      (71, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '50ca4b50367c7ae00a823e6fe26a410daa0b349dbe7f034fef85a2888448f62b'),
-      (71, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b5c60b85a9d6abd3b7bb582a73bcfa507d460c6ca8f1903bb4af8eb31ad2b10b'),
-      (72, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e0b6654da903f7f0a4ec53e7024cf31845426e9f4d876e43688c54e57704d143'),
-      (72, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '52e7b2a41519abb9d2b3017cd35d4d696880c661896bbc02a4e506cceb998ef0'),
-      (72, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '703e035ac4c9830e43e004211c25a19252736ce590ba730da7f139d4f66463b3'),
-      (73, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f944dc7898bd41896fb62d1a3c677ba0e2cafa943997f969061a6611032b8678'),
-      (73, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '6e1152b84321a4e194f6789bcd2c6d857d24427c656e428c9f069785d8dffa04'),
-      (73, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd14c15b7c6f849df301455216c24122a8cf44058a4bfa08ca346c531c04937a2'),
-      (74, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1327329f91efa9b96533eec7b89bd81d7a384938a697cc04cdd314af883026f5'),
-      (74, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '1c1bd8078f86b6020869121f3ec2f33a34e4c6dbbef496859767e75e91c77ea5'),
-      (74, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'de42091bce7018e15c48adae21d3da8c6d7be8b7ed05514b4cc736eb89d1339c'),
-      (75, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd6665e6d294d7b11053cc38f0e0c14b88a1ed80c37acee3944668379f869e4e6'),
-      (75, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '410c307709840c5b2c0177bc8cd538387d1a045b2fafa6f5b1ca886ee7b23458'),
-      (75, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd6665e6d294d7b11053cc38f0e0c14b88a1ed80c37acee3944668379f869e4e6'),
-      (76, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '037d59e7ad7d5c44d5c79c95c97c8e90b3c241ecf096590d5e7df9be78dab427'),
-      (76, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b2cfc5722b696b97fe8207c77aad175cc55a55c1e55653412d3667cfb281ac46'),
-      (76, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '730df7d3af45a01facd422329a72ef1bb72eee1362c414363ff5352cdd9ba69e'),
-      (77, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '30de9dd6c0d962280c17e6fd64270a240f0de03b99b391d6f96f6c6deb3ddc1a'),
-      (77, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '72aa5562fb35b420e8f31ef32680e9959ada8d765bf3d3cb7ffde94769c0d7b2'),
-      (77, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ea86a35f3aa03a321112efb655880c544a548a3ba0b25e76841d8fef0740beee'),
-      (77, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (78, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '206797f9f3989430c16de41e33c401417fc450939df5144f51d228e120efcc30'),
-      (78, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '42ad75062b4a125e12068866abfc4474dd38c65f5215f9c7f1de2628f48798f0'),
-      (78, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '875fd088c3e4fc6a48ec6d7f9b897956a5ab6a83b9710de550857731c1311fef'),
-      (79, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '406271ca00caf24b4291be043090cf488a223603b317bbe6c5de2f8f56903f1d'),
-      (79, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '7df900b8f93f6ea1216aed3aa16f76c152c1e3bd1ea71896672bda8a59e5ce4e'),
-      (79, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '406271ca00caf24b4291be043090cf488a223603b317bbe6c5de2f8f56903f1d'),
-      (80, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8ebda9e7b071e7d22a7f29ba0bddd7be40c620d375410c872ee232d5c3fa7cd0'),
-      (80, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '37cbdb79cc9ff183e612bd2cadbd08b16cc0db523a4ba616763506ed207a9008'),
-      (80, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '66341cad8a9439bcad82e5a7cda18f23d3f7d7c2c2886e0c8bb10ceda1078525'),
-      (81, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '275ee466e2127975d7636b48bbd9df1cd4c6980601f5d34a3dd55942def46ae8'),
-      (81, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c05487eeddfef8792a3e4dae81df9272d19e46e9dbabb73d9b7e7ee2e84e3da6'),
-      (81, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '29b0d1643c459e7f3d14960c30d576badbe404da8d0737fabf43f3ce91af6007'),
-      (82, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '30af75ad2e7c541880afc2fa717e15f7c9dcd0f45f387c4bc3def1b8251065ff'),
-      (82, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '8c4548767a17dfdc7fcaaf9ebc7d954ed99f227c5fa76d2e853fe65523858634'),
-      (82, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'ad11f7cd3b8196765b0b7083b5eed9cb8955f503eec2d4a1b02adad2d43f5ddf'),
-      (83, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd6213bebd90807c4dc07c26304dbf38b108b87c14ac6276fa538bb814bb16dcb'),
-      (83, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '27cca38bb2d369be0593d5602064633e19f081c5005a50e388661975a25c03be'),
-      (83, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd6213bebd90807c4dc07c26304dbf38b108b87c14ac6276fa538bb814bb16dcb'),
-      (84, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '454d228ad2decb2a85fb20088b5bf4beb970151df8441c20b15cd830bad2671f'),
-      (84, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '05cfa623870146344ed874e8453ea9dd3509d7deb2d0b79a417e25617c4fda80'),
-      (84, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '79835d4bdc2a31ef482189a40ac4a071a6e05b3e083de772dde7891c3ca4aa6c'),
-      (84, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (85, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '339bd189f1af48360449d3eea66cd9b8cf8f5297bda6e9a9e07cb68d2fbb1558'),
-      (85, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c66ffdc37a33af92872a8ae4bab6afe80cf5bad63e81db586973ef6ee8064f1a'),
-      (85, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b64257230f974cb0ed6352c4436d5d2f2aa1718e038c80133179cb7a05c192b8'),
-      (86, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '590ae5bf42b0448c2c2c4c9c7ceb1e560a0417d3733cf7e7cd690b3269d1e954'),
-      (86, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bc8ad6d078e9bec909e213820c743184a778b3ed2e9704655945bfc70a31eab4'),
-      (86, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '706df6d96aeb48197a1556942b37e23f72f66a61830dbec13214d0316cc625e1'),
-      (87, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a3b3ffa5a877f635c4cd7ace9e723d5d44f2c4e279d224969580118230243cab'),
-      (87, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '68d1e5d4f7d198b54274d1647d12b21553c43b105401501790a61d4c93109be9'),
-      (87, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'a3b3ffa5a877f635c4cd7ace9e723d5d44f2c4e279d224969580118230243cab'),
-      (88, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2ba3647a8f2d4d1199bbdc709f1b3d7b08f2f54e584933e6ba089f0d4d437ce4'),
-      (88, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'defe325828f83b9c4a391366c6fa6c93da7f1a6e227eb18962b73ddc65b18945'),
-      (88, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '15657b7f5f36dc1611e289b8e90d804c145b32dcc22061bd182e60859dd1f304'),
-      (89, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7322be20626fd40d5519c5d8b3dc808638d6efa4281bac434d0b8d9d7a28049a'),
-      (89, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a24af3c4c464a1b868c76ea4feb7ba6ed2044a33fbf02fb1c8d02ea9935e94e8'),
-      (89, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e8e290830a39c25e37b2cec23ccdb0de76763cfe1bbfc2641342ba7e12d86be3'),
-      (90, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'efcadbb4dbde1ef5c7399f1d96e7d68f50f9a4bb851020ffba6e48f8171ce120'),
-      (90, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a952542126a596a46265e2c6ce9f184c8a52e013daa41c936661f41eace05511'),
-      (90, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '68e4eb783559b25ab7022cea9f54a15fb94867ea48890012603cbaa42b33c296'),
-      (91, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8106ea771e20cbcf91a4548e3d5b70f0dee06d5d9f0a7629b686be0f18900e7a'),
-      (91, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bd70cd58bf57c0705156d73c69dc793f0bc12c270aad39b54efadb7f391d86ec'),
-      (91, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '8106ea771e20cbcf91a4548e3d5b70f0dee06d5d9f0a7629b686be0f18900e7a'),
-      (91, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (92, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0567b499f4c63e9e3d8a49149bca5155aeb0681af8ecfd3d05d426d036b778ad'),
-      (92, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '9f57f5202f335d7ae6f13853dd61ef45a5996326ffd56c65251f38ccbd8538e6'),
-      (92, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2c54ab4ea57614ac2ce6ebac6a755bc3afc533c6f5206788e9296d025d8d58b4'),
-      (93, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '09159020da0512a357adf6662b8b785006c22c77ea4d47dd8d320f3d9f1e0235'),
-      (93, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '9e86159ee841dcd50023e6f000a0bdc172e4d921ed43d8cffd466b08992111ca'),
-      (93, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ededad6a98c7554a49f92a59e8bceae113a5a5a05b5751028cfcba3d25fd762c'),
-      (94, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a3bc668b1a8e34ba19f740256921527bb2199c1a2e1457219f72de427d97f3be'),
-      (94, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '6b629ba62578351f478bd0ec937d2a040bfbe4fe9f2427d856aff2caa8cd836d'),
-      (94, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '06773efeed702fe586b5015b144f9beb16188323ca2c760e15a1746a7264209d'),
-      (95, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '93b2c85af6d68188ea33dbc0de338b3f9c7dc5f69f0db64c5efb69790f7d1841'),
-      (95, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '66bff30247e73e4b13af12ff34a5eed82cc0cf1222248222c149cd32092cdbdc'),
-      (95, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '93b2c85af6d68188ea33dbc0de338b3f9c7dc5f69f0db64c5efb69790f7d1841'),
-      (96, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '31c83908206b5563ddff70274ae5a97061279b69a8ec2fffb78a5be2bf5d5d2d'),
-      (96, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ce272a38e0feb4fe1bb708c6d90415b4d978729fa7fbf7beb5e63f36f4736206'),
-      (96, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '33984593698f35ef9083888c631dbcaa68042c15f984f92ececbd3d02d5d7d32'),
-      (97, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '21622891a28b601c141aa0b65ef88ee6e744807ab24b5b689f837de642dc3a48'),
-      (97, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '0e36591c2f58e911557645c88d221dd27054bbcd9c0a6ecb36f1fed5a4ecc1c5'),
-      (97, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3ab088cbf3db8294de25aec4620f7956f785b25979d006a8cfb39c148e22ac88'),
-      (98, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2b804c31840c3d2dc2d511b1ce367a1361ee6ee4a1fb00503e1b3a2f12e40362'),
-      (98, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '23b9aa34c97749da18ff952c2ef327e3ff1b86ac491bd248aa89c12ab6afe644'),
-      (98, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '9c22cca82230e6eb5aec047608b65cbf649e19acf5b84e1b539006820145bfa3'),
-      (98, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (99, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd6b7ad0e8ff8c92e8dab46a7da3fbef18c0e0b1d66d0642abb9082b30df107d5'),
-      (99, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '22d7f3ddc42660b2884ceeb6335a77bba93be1187f132f7d2733fad12dcf76db'),
-      (99, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd6b7ad0e8ff8c92e8dab46a7da3fbef18c0e0b1d66d0642abb9082b30df107d5'),
-      (100, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bd14e3a2d96c8746c4a0bd3f40a19d939c4161e21a76d9d6e3306838f0d54880'),
-      (100, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e035b4638622e53fd376a8423da48b3b274ceea51bd7d2299e3af7e599d765b0'),
-      (100, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a7b4de2244dadbc7142ea389c93af751b485beb455f1d81f4b6c2c6eb8fde498'),
-      (101, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3e71350fed486a54f7b723f181d0875e62f10d69b3b3a5228538682563604a82'),
-      (101, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '306754241cc31a08896e7b8f56cbc50af047ce330447df84b395635d7d6a6385'),
-      (101, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6c43a451d630c127f35b0615911ac35256f2a1fa6cd0dc2b5c2d7284d1eddab5'),
-      (102, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd283f5d2f5ffb3cea6e78ca0eadbb66184e576cf373aa905162768bae4c429c3'),
-      (102, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '7a3ad8bcecb8cc927267e04c80a674849b27ef53ac477f51aa8e9db59b177196'),
-      (102, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'd904e1f1e028ba9058a128a6fd724f0f9892ae8fe49c8f7dc2613183f7f8bbca'),
-      (103, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '56c43cb8b46f764ed7752863d33d95b253b5ba7515085acdb7645e5b0f6f7a69'),
-      (103, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '8fd5c3c19ec6fa33d210163bcf8734efe69a6ab5174e2133f74e7f6ecbce3ca8'),
-      (103, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '56c43cb8b46f764ed7752863d33d95b253b5ba7515085acdb7645e5b0f6f7a69'),
-      (104, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd4e77306b28f2ac9526162c36d08b7246be7ab7c6a09e4f67ef03d713c677927'),
-      (104, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e524e3cb9da00f50a05e433505d14a0711d0f34c5ae91d671c931fa6501637ed'),
-      (104, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b9c1185c07fa77e15fac84e8e894d313da28e85e361501eca31c361149e7b6f1'),
-      (105, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f41a29ae4d4e61e328b2b1307695c3ab7b11d38a59e835e3837f885307c75f1f'),
-      (105, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '96961be21ba80d2103dd568ffedd1a6524d5aa72f00b2bd331196195d864009b'),
-      (105, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'dbdc3c2f1620edb3ebc3cb8d9b04391f056cac306ea736fcce70c7828fc84b8e'),
-      (105, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (106, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a2cdb2128a343b4e08c5d2c641aedb82e9eafba1eaf43841f52598062e20beb6'),
-      (106, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ce5cc2d921f1a48124d6021c4f850a6d4882eefb806a3da20e937297b45db614'),
-      (106, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'b40385ef45de2001ffcda465272da7afd6dfbefb3dfacc49e0cb94e7498e2dd0'),
-      (107, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '21262e16d74d0e05a80ac573c7a71563f8cc3375569bb861f98a8ddee9f6b2e1'),
-      (107, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '6fa467e28ecfbe9fbf7d6e762d5112df60c1ebeb429c55636b1714c564f95617'),
-      (107, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '21262e16d74d0e05a80ac573c7a71563f8cc3375569bb861f98a8ddee9f6b2e1'),
-      (108, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7daf4e0362c0245d3f2fe229e28559b79e98bad7b3a1b1f810718a1f157ef3bf'),
-      (108, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '83c23571b4e9103bf79c9542821887722ceb660b3136d86b3a80a0ec470f7ef1'),
-      (108, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '99b5cda7e282c14be362841d916b1fe226b87d540669b80dd94a21a4044f02ef'),
-      (109, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '74e67393f354440024c126366dcb3b8a867460763ee10ad99cb836bcd3da4d8c'),
-      (109, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '4456bb62fef1e6623a35585927e884d14465206f42a88c82ef44754b06f8fa33'),
-      (109, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3b78a66ba7629e7079fb5df633332f58390011041f150ee8707714931438ac86'),
-      (110, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '88149dea9fbe53a8ea72646b5c7c396594029794c6cff74710dd6c72b1a0199d'),
-      (110, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '318eeb6e53025e27c2715a98191549a7e69db52444970b1d4f37e08f58545ea5'),
-      (110, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '280cd897348c9100635bf79e7dbda96fac1641df479216a6eb059c52522860a3'),
-      (111, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4d5ebe3caf11bfdc45c2d50eb3a1bd5faf9bd6a00cc51c351dcbdc391e9039bc'),
-      (111, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '6eb4c27b845a1430c0f2c0f83928dd47efd320b2ab6827bb3b9cd2bfb913a336'),
-      (111, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4d5ebe3caf11bfdc45c2d50eb3a1bd5faf9bd6a00cc51c351dcbdc391e9039bc'),
-      (112, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6836bddb74d980c73ebb6f0cd6266c411b834e7d2b6992a44217c1e909c5bff4'),
-      (112, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '3cf0f52bf97de56f4ec86a970574dee70abcff802546c2ba2f40bc8affcf3a17'),
-      (112, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '52a234abfa3ad06676e46f71cdb7a821ca35f292c962a1386a44acb7ee5c35c5'),
-      (112, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (113, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dadc3ff07ff610efd9e91840e1460a95ac2d68405863c38b9d0acb6e820337be'),
-      (113, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e1dff67710b9828215b38bb62b3acda1bbd4e13576af606a959244ab8daaf73a'),
-      (113, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '82db380e5fdc6c5f06c93b41c7f2b7e5d6840416fe8bc1fc47484f56deda392e'),
-      (114, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f7bd5aa3fa3ba89b77ba897b79e05f475689a673e38ffcc4bf285b0b4740ca64'),
-      (114, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c5fffacdc68049e3f9ad1dde51093e568d3b3b45be08e46617931add05181397'),
-      (114, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '830b2056f9bf1099e2262d2b2924536769fa84a79f3d3f967d9531d999bba270'),
-      (115, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '97d1b2556fa8a8309f6c181870b4c080771d2d153b5a8ae9ff6c525e746636d0'),
-      (115, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '65833d64dd274ad4112a2c310dd0013670f3a2aadef046044cedfa6cd3aeadfa'),
-      (115, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '97d1b2556fa8a8309f6c181870b4c080771d2d153b5a8ae9ff6c525e746636d0'),
-      (116, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '47fc6584aa56e6c8157dd46b222eaffb4e91a9d9071cb6dfc092454cfaf661bc'),
-      (116, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '5647928d6225583e6c318365a8e9fd59ffc7c119deb26a6e2990e81d8fd4f1e0'),
-      (116, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a182c80b8395b3e324f29f4c5d477c9bdd29eba529081c09df7a76c62d8bf9ee'),
-      (117, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f8954164db9df57712bca798a76fd5cd327e33070f11eee4c864da8b321bd421'),
-      (117, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b66c70e53856b1ce0c624e7d8aa78d9311c68a60b4d524244942f9f95b9ef7f1'),
-      (117, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '142df27c6ec2540f92242e7cedd0406362855b13ec1bf10efe906aac9748b28c'),
-      (118, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5df00448cde0a83da24ddf1a0d57ef04d59d612256babb3e08b28ff5339e4d46'),
-      (118, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'de5c0fb8eb450fb40ae25938f3c4611de3eb723fbdaa2687e6f74a29d9dab4cd'),
-      (118, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'a6449218b819ac1ce6de4c03c41f71c4933cfcc862d761d3db2abcc2b7cded31'),
-      (119, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9dc7f3feb12cfa8e44e035dddc352093277c4ed85d3454541b2d737ec87da16e'),
-      (119, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '9404ea6f321c3397b042b8ff712312bd03e21c214fd267b7279e14d1d53221b1'),
-      (119, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9dc7f3feb12cfa8e44e035dddc352093277c4ed85d3454541b2d737ec87da16e'),
-      (119, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (120, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '470015c95776f865fc2bbff834865a827bc19832a992eb1b388ac4e8f0e7159e'),
-      (120, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '77bc10102abefad37cceee9313750bd9ae5e9d31a463998783ae00c189fa9289'),
-      (120, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '15195067ba8d07ae1cc9830d38347e48a62ef72ef616552bcb413468a545fba6'),
-      (121, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ab3beb0861416d1117f0c05be85c9055f807e4e90c15ba8d5e72f7de586383c5'),
-      (121, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd4f39d430991217d056d49df107f2a2dce403855e4dd9e9abceeab4a54777845'),
-      (121, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5b1cd01e4b5f7717723452e2b1940f4d4424b731700121c68cd2e5b1c07f5d8a'),
-      (122, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9656b81bd5c45a16f337bc7bbe43de82fd0c3956b582dc889051b30e7c10479a'),
-      (122, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cf287fa09cffc5d85103a5b21283ecad6eca2c935058736c2fe967e8db436aba'),
-      (122, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'b814111ffda1cdf1ba8f0ac245169876960a71cf3cfaa9b46d6293411ab2e2dc'),
-      (123, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '87b8d9d001891d54fe7423722f4bf37ac0e1262e662270068f21553de9f0b156'),
-      (123, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '1e68eccbfadf04119f6e44d628e0c52f0bf3c61545d1fd8a99155da125cc80c8'),
-      (123, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '87b8d9d001891d54fe7423722f4bf37ac0e1262e662270068f21553de9f0b156'),
-      (124, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2cd0d0944f7b11a87d8d43f5f26df6f56f31c3df712585fa0a780efc23681ef9'),
-      (124, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '17a03852c021fa921a311564cd02a2050e056def260d4c3700791413d8542a38'),
-      (124, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c7652faf701a32a481b87d90699ea50601d03acebdde55b541fc310e2113d927'),
-      (125, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '513338e5f1d3a8e09971e3ae55c263c17fa067aefdc1db74b72c412c5bcdb08c'),
-      (125, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e9a2eff4d704b274d1f42eb64f63af075b66efeacf55eca5df112a5ea4585eae'),
-      (125, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f04eb2e8ccaa074222d405a1766b81fabb3e51cb9bc6e26d46eef2b8501caf21'),
-      (126, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1285a5364c0640a6fa5dad1388b7f75eba16df3bc2e87b3556469e434d215a50'),
-      (126, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '6d8c1ba23eb842c16f8dab44b255111ade65b753304803f7b187bd8cc62f8c66'),
-      (126, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'ef3adbc7bdb390dfbb63fa3ad9495e08caff0603678e3cb2a1f93c869d31845a'),
-      (126, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (127, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c07475d6c0ca9681bdb992983741140349ad9c5d3797c43297b1792e0d0060dd'),
-      (127, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '31b7a8c0c1af7e5e013dcf1e6ebb1e8ba6a285957bef72e9f659a9116e9e9705'),
-      (127, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'c07475d6c0ca9681bdb992983741140349ad9c5d3797c43297b1792e0d0060dd'),
-      (128, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '01e3a2c70881c9e5860e95cbec9e61bf0a9898ed65c3734e20b6a07947dedefd'),
-      (128, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '276ccbca7075e58e98447efead2b14bfc6021a1172b257046dab4a0b594ed0f3'),
-      (128, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6373e3ee83a2013b0997bec4a9bbe2d534d70476a276bed775a74e6893c6e10b'),
-      (129, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a1542e88d34033ac6074969224814711c2d05c7b7e5ff8c4723fb96a5dfa19bd'),
-      (129, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '8a0d50b1a7eff1d8396b1c6dae5747ef787a2ca11d68d427116070f6f5a45664'),
-      (129, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6d27795fc057fdbc0a61d2aa27fa40a9c7612f88a95a5f05630feb5c1f6c1d66'),
-      (130, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7a4909d9988589056751162dea1e5663eb9d3022841b742d2c5adf275366e7b3'),
-      (130, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '719f6dbc7bc2e051b1f6748741525bf6bd9f8dfe192deac05965404cd16cb786'),
-      (130, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '26f778749579e110c0e72657ecb9306f27c39f067c7db4a1014d0d949236d008'),
-      (131, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c69671494536a76ec0b52d3b6d63e70b6a56978df4eeb320c32348c9090735a8'),
-      (131, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '3725922853048119df370831470c9f6b22e114835c2c906bbf153b3a6965fc79'),
-      (131, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'c69671494536a76ec0b52d3b6d63e70b6a56978df4eeb320c32348c9090735a8'),
-      (132, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5958f68df71294e86f7859c671b5892348d58c104470f8b3067837e541e761a9'),
-      (132, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '98fccdecd8795e1d1ec589ec1b6a30930b001e440e16e887e6be81aa6ea25018'),
-      (132, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5ec05149aea7cf67527391b0a5861c5c716f7c2575915a806a3682d021ec4655'),
-      (133, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f7630c7ab6b96c386889bb63a886887bd549003a6b44cc30ce35c37a2dedf5ec'),
-      (133, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a15b8bc60bdfb695f2ed7d13141f44ec6983d7641e34d1584d8be63a66e25ae2'),
-      (133, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c537586e81760fddd4b0031bb347b25a9e77e802155f691ff8909a949adb05df'),
-      (133, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (134, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b1710e3d88a3e777f94bb64c03baa93ca745f8154a0f127a306a231ede49b19c'),
-      (134, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dd9e109ec752b7f545d7c469f7e5a416bb8c24f4b3ed78478faced4e5a35a1c8'),
-      (134, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', '0b510c30b58ed38c44779081611f6fd423f5b758937ee6b3cdc97df2c67d2e79'),
-      (135, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7d3ca9a65e76b2179c963504baaf76c4ee15e778fb41d8b9f12c048c0e54a11b'),
-      (135, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '1b89c0e70220cf1e12988ce5dc7520c075332a5ff6db9738312c038cec4216b8'),
-      (135, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7d3ca9a65e76b2179c963504baaf76c4ee15e778fb41d8b9f12c048c0e54a11b'),
-      (136, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8e6050c233f63e29a94fb007ca7f2a5400971211ce2aebfcaa25051233f2e440'),
-      (136, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '9752a947d9ce1e4903ef71666599336fd249236dc65c17f46e073ab2bb0e7f82'),
-      (136, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '786339f45d7cfb395a7adc2f417d61d4955519d803f5f3b3ced5841b57997a1e'),
-      (137, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ccf739c8457c102a4e337f10d43696077f93abf81764becd41b6eced62de117d'),
-      (137, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a06feccf395603d58647dcc3b4230134e0ed4f182d86cf041b629a254d4c4ab6'),
-      (137, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0a761c94b78479cd3feff24f83d62e754c86873be32ef03fd10ae82295265c0a'),
-      (138, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '206b1d2bbc15373f85e1ddfe62406282b920a7976f7856585c40de3e73f674cf'),
-      (138, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f8f64d43da57a9a7a2df470f94a8cd9cc60a439691c754856215c5296f94d5c0'),
-      (138, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'eca05717994f0ceaa065a2b24e951c98616bfb33fa02a627dcbbaff74fa9dc06'),
-      (139, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd28b6ef96c840da150a586b644ea87ed84ee582f2b09ae44abe5ab05bf9e152d'),
-      (139, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b54000c2fb3dc72170d6440ec8d75fe9e2f29ec874292c3351dfc48155c7880b'),
-      (139, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd28b6ef96c840da150a586b644ea87ed84ee582f2b09ae44abe5ab05bf9e152d'),
-      (140, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '20bec15e849e5ee494ed1ea63042c05dcda9bec969cd8750ef3a8245155764c6'),
-      (140, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '290925ec3d02dde3fe6a3ca32afad222410a3b4105f173d3e231038a6cb2e56c'),
-      (140, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4a17bf6d6c4a9f9d9bcc61f5bbdb1eeb6b2e1d8841630cab1c5bdd8826d8ec59'),
-      (140, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (141, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '279d7bae85fe1e678f889f517a841e1e0101be99d9b42dbf54bb144443611630'),
-      (141, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '85f69bdc6d5a85c5ac1ba56ddad553514ee0797f4b8464c465938c68e76a3ef7'),
-      (141, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'baf03d152f1ee8e8de09d1cd13a8727513bbe7dfe2b106e552c53972120ecbfd'),
-      (142, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '71ccf6b3756b8f6c1b363ac0d3cb1a1749caea72eb605cefb5b5ca110f29bc00'),
-      (142, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '177c9e29613a38907f23c5ebe81bbc8768597a756eda841d019229ebfeee9cca'),
-      (142, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '2ef21416d428e6173a9133954d530be532ad30d7f5d2fdfab20d8668433eeb30'),
-      (143, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '213cec874b8d609e6ec5649df61bb3562cedd47e41fe80d1f6a32570627a43ba'),
-      (143, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e724c11c598512930b4a4132a4bf4518098a153d0045f6588de02bba96b21995'),
-      (143, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '213cec874b8d609e6ec5649df61bb3562cedd47e41fe80d1f6a32570627a43ba'),
-      (144, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a09470b80f8c44c391bf035d0503d44f10d0c90b0ffa0c14388940ec56085929'),
-      (144, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '82c98a150094e19d298d6d1e7dded93f17d13308889244fd3b7f8a76fb559fbe'),
-      (144, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'edca12af06b2c3d9fec7b037dc17e8db0461ede727c3f257e5d56538ae46d5eb'),
-      (145, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '23ae57ed417e1bc6804eb50e006b2c311742372d9f27407a99c654076fcd8668'),
-      (145, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '555cd094937adf5b11b90a46fbfd3da24ba517c41c194534e92b35b55aa031ec'),
-      (145, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1014b56bbc5580734352c2dc3cf02c08ec29e86355f8461b3a6714e741b1e7d3'),
-      (146, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cf03eb8f5488f6f20bbdbda16eeb861a99c323e211b35bead4683748a0ad3696'),
-      (146, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cbceac9652b2f3d81a676e93f9403d8977d081174a9895cbaa7fa39b9c1805a6'),
-      (146, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '24ccb25024c361fca8cee6d7324479cc831003cf016e881a061572d82e7c1cde'),
-      (147, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c5d81f91d4d4fe33ab3e11903eebd8e9cb16ddc91669b59b5d0e29f50388f3f6'),
-      (147, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e1028cbb08cc7510179ecfa0ed7b80983126d168af641f877d154184d784a951'),
-      (147, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'c5d81f91d4d4fe33ab3e11903eebd8e9cb16ddc91669b59b5d0e29f50388f3f6'),
-      (147, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (148, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'adfdfcb0f2b1c767a8a0fae66f30077c66ca5da068fa5e56b1d2ebefaab1079f'),
-      (148, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c038a318de28c9062ddb930f03a67db9a8cc8bcfd30754089e6853cc99de1862'),
-      (148, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c71696f52116f1e1fef7694e98cfd82a517df9ef59566085500e6e4a5aed352c'),
-      (149, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6364b3e9e1ba3df70e7c7daa39c0d5606881cfedb317e6a31335efab7524320a'),
-      (149, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '517f1a9bea990dcbc6353d3fbd37f973eb1ff002f5901d2c7934ccfa5ea1faae'),
-      (149, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e0abf7a429f5a2caa831ac3349feeb1ae31bc5a0e83dec10165495ae4032c92f'),
-      (150, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4dfbde4ee4c1a8975efc5f36cda43d401536e65b9329f2a461f516cf24bc9368'),
-      (150, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '4647936eaa22db46c41c7cedc520c327028d7f6428b3d5a6d7927eacaa33301a'),
-      (150, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '128a0f4cf0b603473c597420893eef7e4bf2fef05df4bd6bec852bf30ab4229e'),
-      (151, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b29a97cd2b40c6ecefb2440a304f9289a342f1dba804f6f0ca327b627adb2c89'),
-      (151, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd3427c7e742947b2f2125ad813f1ba9c938b014607dbc0bbb18fd27c73a4cd13'),
-      (151, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b29a97cd2b40c6ecefb2440a304f9289a342f1dba804f6f0ca327b627adb2c89'),
-      (152, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '215cd815633e4edd4f6cad089f1f9eb45109778b95c2b2aad7ae0d7445dad42a'),
-      (152, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '54b042fb008510f2182bcd60537780378b60e434d387f73cc1c8391ee6a46b49'),
-      (152, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4deccef1b9f072ad9e5c5a78159b2590d3012718d928036ba34af70e34ab2997'),
-      (153, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1b8a6b53ff41f6e686e2889892c0c81ec1bdc6d3c6f7adbb1c46cc5c408eec6c'),
-      (153, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '8f162bc350b498e4033babdea10a3183e0165939d372f6609fa7a2e825bd6935'),
-      (153, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '806e8fe3e7ae8c5902779e8a925d8ae2b73603ebbc065bd625ed630718f4bc43'),
-      (154, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cdeb5db54c3a7044f727c65264c5bdfba56a3ff9f2157032a1d5237a48039e92'),
-      (154, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '3d0f10a4d5a214e14baa30ca4d2e0dba44440857ce38837ab5ac00b5e1ebe90e'),
-      (154, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'fea95ee6654315a11e31ce972ff371fc74f2ad8dc02dd7439dafe6ceff383e9a'),
-      (154, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (155, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '571cdc1e42d6e39d45838cb37f75e7c58e20f41997e34250de43280408ac8e98'),
-      (155, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a674a79330cdbc9a2431f32bb0f1671abed4deffefadb1e80437f76cc85ff37a'),
-      (155, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '571cdc1e42d6e39d45838cb37f75e7c58e20f41997e34250de43280408ac8e98'),
-      (156, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '692a3d0c1c495c4a6e5dc5c8388f7027b6afa39c1c77a872670cdaff999d4826'),
-      (156, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '013064afd4005e6da193a90dc40cd3a2188e1a23b915570e1383954fc563eb07'),
-      (156, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2b443b7ad8b2e886d0a3cb19b6a62fe3bce638ad0476d3e121271aa40362680c'),
-      (157, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5c019e80b3afc35bc384628212ba284edad3ba43e01ad630bd1291a72163906c'),
-      (157, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c5025f34a999152fe48b786a18bf4b4e56ffc11b6fb3100e6d522544ff95d137'),
-      (157, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b4d66285a0b42997b9450f067004a26918fc1f706b965774ccee0cb87b6b91a7'),
-      (158, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dc167d08b17390448a3482ae350448d960398295ccf7a3e523dde978b03109c5'),
-      (158, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '62e90c6cd6e6710f9befa268f976b30842d42745d49011d7939b910cce87e7de'),
-      (158, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '439375adf0ff9106c29b4de48fbc112e48ab27179128c77ded121d3adec4d6f2'),
-      (159, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'aef18a7c2d493c429f639eeb7908e6f5ece23bd9e4a6756924c5e84de4678fdd'),
-      (159, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '9cf5e796012b7a72961fee170c7bf59536a99070a7a81a54ead07f8d8167171e'),
-      (159, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'aef18a7c2d493c429f639eeb7908e6f5ece23bd9e4a6756924c5e84de4678fdd'),
-      (160, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7be2f24dd2fe40e370f336608a7d7cab40fb79160664d71c671d328ad30a3eec'),
-      (160, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '8309251e952e2f54faf02a97d5c756f91ad6ee54b6b3894f2e0335555e663656'),
-      (160, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3800fad1e760f6f3fdbfd8109947bddea5df8cfd383a9d6b6c5ba1abecde30e7'),
-      (161, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6e4b954c90732498f10d42ee6fa3aee2571c4c9ccfb11402196e411b3f72f11d'),
-      (161, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '4ddc9863127c09b1b53621986aa6bf2c7389def000e8a4cb9caee3b0acacbffa'),
-      (161, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e8066faf5d24644b824660b9a63a9bd87e04a34fa86afe3ea92ba1a3275b57ea'),
-      (161, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (162, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c156f0d23c6ef966299aa02bd3d35f6b1aa2fca4ee2f9a5d33daf8ac112e8fc4'),
-      (162, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '7a007e3761a545fbacc1888f51ca854b4466fe845b0a01e39be19c0a59403c80'),
-      (162, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'fae10859d4ca253d4d3bada893ec67cc77f94103122d06a03de89b4886fd53fb'),
-      (163, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'faae597baacdfd32d60c759bcfa48f677a07356a8e6b5ddd19ee53d524561710'),
-      (163, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '3fd976bdd83c967e52e6f926d28455c82c0a008ec37eb424ae786f8260a52fa5'),
-      (163, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'faae597baacdfd32d60c759bcfa48f677a07356a8e6b5ddd19ee53d524561710'),
-      (164, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c051fd0a53509dd69af2edaefdaf7c0ebad2eed85449e9e438d44d2c808ebf31'),
-      (164, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c1940fa058dc8495862ea0d9362cea88557d40f97dcab1a165dea31fd455b008'),
-      (164, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'df18bed99d344168967b4974046adabba5d871f3e4a0b5712fb67c50d4d45d05'),
-      (165, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3660acb6bed27ee9974c93af8d41598f764220ab19f7cd3be9f81a478f6efa3c'),
-      (165, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '92813e3a8d68e65a8d7788d6e9dc3002ce56ec1c2d1443d989f46211a7728814'),
-      (165, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f30f5f632c8688d71b6e81ee61315d9fa2ef89177122a28258348f3d082f852c'),
-      (166, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c04b9df498777aae5fd60b211062e44b98665ed95fef3581c5cdc8e113ce2cfa'),
-      (166, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '2cb115028f9e7c325357bf346ff7445bc2d7e11aa4694dc3380f622c489aea62'),
-      (166, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'de1da8f3791deb5ea5a11c9a67179b1e240aa14979524a3cc28add0e3612c0fe'),
-      (167, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a4a3f9897208410cad90c97884c100d77a376cdf5a93c0351ad6305225d318e6'),
-      (167, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '08e7d3ac6b8f71e0528562babf304b6062e7854778594405faf4e7890146b1c8'),
-      (167, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'a4a3f9897208410cad90c97884c100d77a376cdf5a93c0351ad6305225d318e6'),
-      (168, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '060748d41376ef747f165b0bcd0bd8a264175eae96a1c1f5c79934e72707c791'),
-      (168, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '72efe3dbaff52cf17545a73c4a61f974292800b01e34f7d749951236737bc838'),
-      (168, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '8c6b9090bee7d63887fb3df693ac11ff3f9fb9633dd92bb39993cf0517e21273'),
-      (168, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (169, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2bdc7213d731c924da282c5f51d25c795a5330e75df8d209775b935d8a998260'),
-      (169, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ec4a89c086b42c63b6826584c6969adc62fb87d14523ab318ab37072af9e77ac'),
-      (169, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2fd2ebca57a0ca730e3872efe63d6cf537760e99cf055b9a990f8b8129dc6687'),
-      (170, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '37307cd87baa37074701ee715d6ddfdf7003698d13961ba6ab4621a6b138b24b'),
-      (170, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '36cccb2fb3de712cecd2a2ed42998201190dcd9508111f0f6b2191c567975e8b'),
-      (170, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '42b9ae1508f34a5d58c5ac8986ce0ef6eb36dd68596441f39ff76f2b337fd082'),
-      (171, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9a0727f17f0d6109586597681df377bedd12325f992fd9c0f74e9abbb2d3bac5'),
-      (171, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '45f8d0aa9840f4387bed231a88812645345fbf18d670e89aac9678dce2d12379'),
-      (171, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9a0727f17f0d6109586597681df377bedd12325f992fd9c0f74e9abbb2d3bac5'),
-      (172, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '18cd6cd997fd68e01b9b84b8ca81e8be279e2b5aa37ebbd53e37241d98cea2b8'),
-      (172, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '5328a815251b86ebe9ff3c637ce973a9fdb59e572074a21f77cbe2fe7a2aa22e'),
-      (172, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '133361179377ba2ef83145bc6f56d541ab03655e7e08c180aa4fd82f9ce84fdf'),
-      (173, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6710fd47e09ebf7b487b5883a543429078a6a927f3d38067b4f6087be9a0b12e'),
-      (173, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '51b2c25edec9b0cc56ab729f41e0253aba494c294b407b1d6e6737e42fc56172'),
-      (173, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '887c21f8e5d42e2f4bca1c9e7a5cf48b2f66ac53cd3649273d245aa009e7c737'),
-      (174, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8a78c0d243799585ab6345c4fb6f3ab08d756c2fa3cb32c7f2012fad3d00eaa3'),
-      (174, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cff75283536d0319f875fc1b904dacb26cc2ea8ba48a0f571fc3bb5fbee5391f'),
-      (174, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'df1fe265375cb2d535a219016f20ebd84b9b75fb2ff0800b853cf60903e5cd9e'),
-      (175, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '75842d96c1f53a5a0689d529f07172de81a3d99e505c36b57a153b0fb36d6eb5'),
-      (175, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '7c6910c33a1c593cae9a29a2292456503e4d89810939ff09cc7e891296c5cf5b'),
-      (175, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '75842d96c1f53a5a0689d529f07172de81a3d99e505c36b57a153b0fb36d6eb5'),
-      (175, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (176, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'faff16f0db7e0e9ab1a6f5f374a7aa3ab716a1b31be4888da1874f75897af48b'),
-      (176, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '79ccab4bd7a6a36980612603cb903e860ee4d1fb33e55230a7f82dd90615e5e9'),
-      (176, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '22555062bf294c596e24361b3b2c000e9027389835b865ef469b2a8fc391aca6'),
-      (177, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '17aafbc6d8c3678618063290ac8273fc7d6cff10f459715e73ab855332acb63e'),
-      (177, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a57039d03a1bf42da73cd0041dee9a68fd32d40b7e6e3bc06d5614cd5add0dc4'),
-      (177, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'aaf769170a98208e6e7d254bdaabafec63fb7decef2c1972488a509bbdef71ac'),
-      (178, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1715d443a7f12eb2852393bfe10a772a881ecd97446f1529f94b11540562a17d'),
-      (178, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '42f1ce577e3762eb667c35f5fc6000039eef8c7395c449c9ef280e07956ea633'),
-      (178, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'e703102dc971f6d7b81b75e1636859b006ad9e6d0b55ff2c625424af79a20e82'),
-      (179, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '62a44b51025f5ac174a9434807d4ed7935a9e5c3ac896e2071a496563e6aab68'),
-      (179, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f2b12c4fb4fd365f6b185c0f9db86307aeb2c7028e9ff40f917eca3cc2c45e5d'),
-      (179, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '62a44b51025f5ac174a9434807d4ed7935a9e5c3ac896e2071a496563e6aab68'),
-      (180, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6158fc34d65a2d0a225b4eea3f19f2107a63e32fe6919da444b41312b2defff0'),
-      (180, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '91e6f638f372c3a70e9d79d79bc7f7dc70049169145f2130ce707d295adc024c'),
-      (180, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '414cc41276076544a971acce1d66e265c25631fb1721695e942190cf23f75781'),
-      (181, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bd6f3b0f03a41bb68f130025ac344a7719f22acd6713b140433abb6946f11e9d'),
-      (181, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '2f68d5a10c2174df438a9b331d301bd9830c5aa0486f2ba593dd7499eccfb840'),
-      (181, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '611f499d485ff3115b8f99c5ddd16debaeaa73d9f6b9b13d35119c92e0c0902d'),
-      (182, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '81a4bd53b56516a0a96145ea0591e5a3f17da7d2b31b3e91ad8a213b8b86defd'),
-      (182, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '83b04d76f8ef073cc8f8d6e9339d16ac4d11fb53c5d760b7213269f1d7c23662'),
-      (182, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '19a0485f1a90557521c84783f31af75f43e16d673a1310a6ad1e9e3fc655c7de'),
-      (182, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (183, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'efcc0e026b711316799568cb14594d210e3f674d15a83fd19f0a19c32f3deb77'),
-      (183, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '16e76d6aa8414864525ed91e6247f9b88da333286efd6ec2bff11006102f82f5'),
-      (183, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'efcc0e026b711316799568cb14594d210e3f674d15a83fd19f0a19c32f3deb77'),
-      (184, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '32f773f5c464f3a08f2a1ee8db1367580da6080bd619cc6fe3dc953b63e9cd10'),
-      (184, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '32771707d5d77e51caa2bcce44ca734cd9736bd9d3972ff209b6cb1ec37ea412'),
-      (184, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3490c601eb54a0fa78a4db36e287602cbb88ac681cc9d600b6e5c384cafd8e4d'),
-      (185, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6536bb2624b078f63f056eb7353e114866723a2367e0023069566f4ad5ebc6e1'),
-      (185, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '5916ccf6f7c83f69d78acdf1525724295bfd575e297732aa4ecdc5c76358fddc'),
-      (185, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '44b8385b1f6863eb5ce615c108dcec33f85e51fa0515458fb7c78a65bd71c197'),
-      (186, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '241f8ab934ab222cdb8128f8808b694ca90f0acd1eeec5576df1496b301509bd'),
-      (186, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '569e85b1c71e803f0e60ea363b47e24b0c4f7000b8d348298f15c18dec37529b'),
-      (186, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'fd9071c80690d754abfee2d2f30959e8584ffdac10a10730092b7b28d03a4b83'),
-      (187, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5d05f9e538457980f883503e08163dedbec2f14997604d1d4f1d5918ad406449'),
-      (187, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b2b598e7fc9ab0ec088a1b74573583a180b6281e2933529d1cf50d4beb92c7be'),
-      (187, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '5d05f9e538457980f883503e08163dedbec2f14997604d1d4f1d5918ad406449'),
-      (188, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8ed32e1c7334df6a2dc3f13966e6b5c8fb34029b1dda82b5669b08fb20a237db'),
-      (188, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bd48d39f5ff40af06a8020e11214a269595a70827aea03689ad2360b01ac034b'),
-      (188, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4906135ad4063ffcd9505c169480e8a09624a1d02cb95e3889d847e807f1f5ac'),
-      (189, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0f2cea35625a968e479d56aa8110ee7dfad90a587de8f30b38f07357c689d1e2'),
-      (189, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '76f1ff0e2df60da469032efcf80e2a2e631c1d0265f0287cd37ac03d421facab'),
-      (189, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1b1e71029771eb14daaed8b9e252acc8573c4f0cc290ca36fcf906d6c0d083b7'),
-      (189, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (190, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '46c9543867b1d8bc8cbf7f22860a27e781fc66c968401000774f86083edf990d'),
-      (190, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e395e266887ada84ca5dd26aa4ecfb919b207b403a6dbefc0d390d9566529d9a'),
-      (190, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'e24c8f790e373d68e3bfbdb5d0797ce1037484d32bb18c24248669791cafd627'),
-      (191, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b5bea63c39e9cb8ae5bf48ad1781f20cfda59af0117d61b2557c3fea05074cc0'),
-      (191, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '1610bf39daad6137db340787b69624dd3f7e064d2f79dc21a5d3d3ab1289c6e1'),
-      (191, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b5bea63c39e9cb8ae5bf48ad1781f20cfda59af0117d61b2557c3fea05074cc0'),
-      (192, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6486d92ecd844c57a91a68b80ea1e7829d75d1ebd644ae1415f6943d6d51ba6f'),
-      (192, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '8204b641de441b048413829fca1afcafe50fb00eef9385c8fcfcc1b927b2a063'),
-      (192, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f40ca2dc7bf7c6de6433cacfd15d569ffa4eb21abe77314729e9e6004bb9a9e3'),
-      (193, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '56918e9facb599c58bf52c44ce54318c87cf2acd3f52eb5717c2affa904bdb39'),
-      (193, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b607fe489570e971a0db0ba6c8eb8f4e8f332ad60fb655b6affefc545a0783ce'),
-      (193, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b6347d32df8b3320c16a3c7127b4d75fc6dbc24c1c4f4b017b0c071afdc92033'),
-      (194, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '420d5f8e79a96fa0bde0086b59b89dd6523ab99917082c22a5ae8a1375abe6d5'),
-      (194, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fdd702bd6c4e9615238678ab3cc52b28c495ec0840026e69a5cae49e976c60a5'),
-      (194, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'dd240e3d70d9d0fa344534a02254a5f215c4bbe30b58ba62473cb1deb2ef3a0b'),
-      (195, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ef91591946b36de8a894d43f67ac707a4e996326c6f478febcb0304cf00fc6d9'),
-      (195, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '2dc614c5357835489c6d1b4a3650733e26839335f27967efabc300e1c235772c'),
-      (195, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'ef91591946b36de8a894d43f67ac707a4e996326c6f478febcb0304cf00fc6d9'),
-      (196, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'de6474d55d949264f9a2a9dcd7e680ebec678ba51422fde532494b0fbdeecc4c'),
-      (196, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '5a99e412a516ca7d86fbe54001fefbd34a64d218f40e705869ae141715ac9788'),
-      (196, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0a0e0a9044459f9ffbb3d2096cc731790c5e14d8ddf1bae96db9bc412eeb6c64'),
-      (196, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (197, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0ce5f9d16ce54ed35516ad840f1ebd6cffe81f6a7d9bd08a164e492a686ce637'),
-      (197, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ff696ee1882f26d72b2c29eb80afbfa8b08c50fa66b639d3fdcc750dad94a2e5'),
-      (197, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'bcf7748473e706122e81e6915b8d74eb132587d8b0277e30bad32fb745744cdb'),
-      (198, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '57198ed7319f463fc947ad6785d32659b0f028756d0ef4c15866270289a5e9d2'),
-      (198, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '51d9214d8385cb36a41b88436cf662f9abd53cd07a7fde03d4191b0e54d6fe5f'),
-      (198, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'd904e1f1e028ba9058a128a6fd724f0f9892ae8fe49c8f7dc2613183f7f8bbca'),
-      (199, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '057f702b41aa55dde003626c00c4d2488d1793524bdb22215ebeaab78e6f2ff8'),
-      (199, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '4f8557f163ce63edce415fcfc1ffc0d80784074b3133d27c14c15c913026ab93'),
-      (199, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '057f702b41aa55dde003626c00c4d2488d1793524bdb22215ebeaab78e6f2ff8'),
-      (200, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fb031bf8b0eadbb1246ec76b27630462d9115d63cc8a5f276ab54d70e5511c1e'),
-      (200, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e40132fbca0fbf90a2049bcc4ec5e8a3bf2ee67589d34c62d0b3d4a746ce4070'),
-      (200, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a83a472daf4ab5cca43b5c2d1515128c6cffd5b2ac100e5acedf49bac0558442'),
-      (201, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b40a12723ed6efe00066d9f637761196e64e23ecdc84f9a2e8d443be5930ba9f'),
-      (201, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '799fa8e8050e950557697699eeb8b92b1e828b5663363518c9a9f132b7beddb2'),
-      (201, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c476e92dbb4d4661a772b204b6060ea0f4bc85fba14d060d8c1212cc5d927da1'),
-      (202, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '636a767a13c3c08ae8c7c6d8a6f7bc84e090069932cfecb1dbab4956e665ca19'),
-      (202, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a12bf01d02d1c67ba76b0ec4418d0d96c1fe98ebd59acf0d56cd6840c963ddee'),
-      (202, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'ce615d7494227ae63a8f8af6ed2d70a335c1f8ed268f2bdc00f0cb9af52abfff'),
-      (203, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '91c5c7953c50cca794dd6ea7ee4e321294511ec46b7dcb448ea8ed69ff51d6dd'),
-      (203, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '5f070fd3afd625e751be492d91a50519852935218f0bb8f878631fa4b134c45b'),
-      (203, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '91c5c7953c50cca794dd6ea7ee4e321294511ec46b7dcb448ea8ed69ff51d6dd'),
-      (203, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (204, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '92381f15fc5dbabfff3d9c6b7c590805233dbda563582f63569191b81327386f'),
-      (204, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '087fbbb0d3da9c95d2b597993e91e8ba1295cb8fa27280190a6b791a1b305886'),
-      (204, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6fcbd2802061f90566500e9fcd170612777f3557eb922859316833b5740da36c'),
-      (205, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fff9283791a14a23b3634cbbb22ca76242c0d25227d219c35ded9d5c8d11826b'),
-      (205, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a828895e52a84bbb83a9681784843853f74698e648a98eb3b6c362f8d1d6ce1e'),
-      (205, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e7569c8540db69b0f2fef1fdbd4065bfb1c9cb59f17c614746726b259eeda474'),
-      (206, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0dca8fb9ffcb4eea29a4f3913d5ad7a19d7e5e9130c8cc1275095fd50434ea95'),
-      (206, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '1aaaf3466c454272b9c54c281e4f622c4a44ec7f56c3d636a16e9f8056339d35'),
-      (206, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '001dd650bee430b7b72d1436aee4b825d6fb5fed41d3c899721d81052e0ed2ff'),
-      (207, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd38f92aa4a29788dd6903833b32154707e3842a9c76a8996cab064fe877c4f72'),
-      (207, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '341aa5b0678ee65dbadc9573cbc8a13d7671d3f7163527a9c3bd64709abced07'),
-      (207, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd38f92aa4a29788dd6903833b32154707e3842a9c76a8996cab064fe877c4f72'),
-      (208, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd00696c55cc9c7dee6462f4cfa62e1c5b40da7b892c121f0f6a98c03901e81a4'),
-      (208, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a43f65eac34f764b542a3dbb342bb7e59e2b9bf421dd723884e6bf140c64b621'),
-      (208, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a975fac778198bcb9780b346131adee033f3f2ab32a967e6dd79dd1c43999eb5'),
-      (209, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9e25a82cf9ebb191084b4ee619a427c638b0b4454ce93a0ae0944b480d3542dc'),
-      (209, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '0dc6253150f51a05ca1b32a87e49ccc181b6f57039963b520739c9328b5b3c8b'),
-      (209, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4a553291d0471dcd15acaa60744f19aa1dfc983886bab4464b1984e04f3d50e3'),
-      (210, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7424cace08fe8dff9ab3e8bb3e5c030688656869db61cfe98e8907cf56594ab7'),
-      (210, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '260eb7d1eeb0c8739425baf1c10e773f24ad2b81ee6ac96305ec03dfe91dc0e8'),
-      (210, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '1bfedb90a487ecce837b77d13c349bf60548cc0326eba5435fd27c359231b6ca'),
-      (210, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (211, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1a6233393e555be88c5f9709d8f6cf62cff87841dc98731736e493958ecb33f3'),
-      (211, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '62925480a178819122d25e79ebb9ad81641ae32b389fd625be97e67b1a146cdc'),
-      (211, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '1a6233393e555be88c5f9709d8f6cf62cff87841dc98731736e493958ecb33f3'),
-      (212, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e9b1f92e55fedd020d6992e0e48fb867513d6202e9d5b8cb9ff87e427660eeb6'),
-      (212, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c8a531e9c19ffd0fd3116a9885dcd1643a29406df96410abbd50930f342f403a'),
-      (212, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'cde83a585e57ef9b8013dc4b801804c2c262c78965c13cc6022d39204fea819d'),
-      (213, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cba03a34c77c3d0c1e98ae26f54c2a99367404c5f12575ae931a6897a085f734'),
-      (213, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b331f5a07540ce629720bfebd278f9556b5b7c80edc10319ddab6e7917758271'),
-      (213, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '25761575fc88bcd50cfe0a18d063cc8fa62277c4b2f807ed9cc13ee146666e8e'),
-      (214, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '67913a8684863b19ff56fd809d7537d5300a247b118dd43e0b091799edcc1c38'),
-      (214, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '95a1bf147adecda8f4c1c68b4d724d83478c04becb450eced30cd1bc19acadd4'),
-      (214, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '3b10d0e4b6b1ec30c7e4023bab7e9e16178bd5dcf6428284e12db8458a231016'),
-      (215, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '45075cd5493fb65f3824c42d2796ed848b4ec68d8d3c482853e63ef4ea92a99b'),
-      (215, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '3b876f252a73dd64889b7c5cd3102b9f0e3598a4d85e8da3cd01e4130fbd6c66'),
-      (215, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '45075cd5493fb65f3824c42d2796ed848b4ec68d8d3c482853e63ef4ea92a99b'),
-      (216, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6dd9d4606b64a31d98f0db949970ae32aad2796283a38cb35f83d4974d7cbc0c'),
-      (216, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cac05fc223c81f442bcb4bf7f90d5634a936e9152796d11ae235a0e87a6a7be9'),
-      (216, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3e185b92b0afdc73d609dea6e5a883a15c3a3d7f51d863f44be23091917bec75'),
-      (217, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b18faf88d6f0e5a45dc3bd1d3b00bc4f502f12c8b9a6f4e55bac751f84e62029'),
-      (217, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '67f1b56502b929e5ae011c11fa9c4f74a574407d95c1b0c15cfbea292adae0db'),
-      (217, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9a3682d6489343f87bcc04b6a756f5c7edf04d1e720af4d5da342a9cfcff82b9'),
-      (217, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (218, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7eef6be1ad9feee7b9ee4340ba955dbcfd9aca77cadee12aa993fb411f164443'),
-      (218, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e8e50f5e255d30ba503581009067c8dc3f6208a94113bc205e3ce6a9bb58762f'),
-      (218, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '81c005ad8123440ebd2c55ec19f865343d1fc36282fe9c2d39064f401506fac9'),
-      (219, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '11ed106da3452990494d3ed1d56867b1b6f471e95471567ec8f15a628d0f7b7d'),
-      (219, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '61d5d7b2f6e64ca0a0a3f31424690f05885aba5ab9a58eba8b013a1a54fcdc1a'),
-      (219, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '11ed106da3452990494d3ed1d56867b1b6f471e95471567ec8f15a628d0f7b7d'),
-      (220, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ffe9c6c6a0b634a2d38149ffe29aba52b2d47c7263e9fb922bcc96abe87c9389'),
-      (220, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '8ddea099efe5754ca39c1e618497881da20ed71a34194a1275f1637b7e87bf86'),
-      (220, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'dbce3efae04dba93dc30e691f4d5d646618ca63f4396864cb9ab3a34462b8c6f'),
-      (221, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6785370c0884ecd32ee8895df944f48ab2232192cfda1ef5c2a6a230a7fba32f'),
-      (221, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fe8769ec49c90ec44eb6d65996a801e5b25054f059ec34a8af6b2dbfd0fbe8a7'),
-      (221, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '44620db6e8542cf755d9c2ea571e162c926ebd183dc6d67dfe86e6e49022ed31'),
-      (222, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f9f83667f45a10a2e035c83a0311a6107fb4d10983c6848d2c0cba5c5f99039f'),
-      (222, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd4a12816e9f38a11614632a0434bc9a72349c409d4b390576d633e9513bf14db'),
-      (222, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '78f988217df713d0d720205f98fdf8545232450ca6909d44f4628dba124cd041'),
-      (223, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '88406cdcbaabc0973cb6a27b99d6ddb631bae6b7ed4d14f143a622277b5f9c21'),
-      (223, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cc2277d7dcddf29f216935e9b45868381915cb0187f2c7b1d0e30725b7be67cc'),
-      (223, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '88406cdcbaabc0973cb6a27b99d6ddb631bae6b7ed4d14f143a622277b5f9c21'),
-      (224, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '18b9c8273ab5fa259bd9d88faad956628fc14eb5b76f9921050d025e92303aae'),
-      (224, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '7753a3a2f2dea2c2bc0cf9741c443a35e1df51b16e3837556d56129e87316872'),
-      (224, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c0926b95b4be7de1935042395fb0b8c08cf182004c329b5aa4fbf7460730ed56'),
-      (224, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (225, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3d42a78501e47e130942cdfae25e85a8cc714cd57484fc1b89d9b057fa73522e'),
-      (225, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '1088cb43498cb7be31f4e5d6fe82d920551744366b98634d994be065f30c07d3'),
-      (225, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ee3df786cde1404eb5c0a4442370f1d347f541839ac5754a45ad69edad34e2c7'),
-      (226, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e0eca1fe4332ea3c8247dd011ba76016519823ba43287f26af2969477b678ffe'),
-      (226, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '5b57733cb61f49b3cf81f32b510546412949a1231e121457576574ab82310fc6'),
-      (226, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '9add33cb0c9d9178c5a6882f1d366ef0b2eafda4c48de0bd52d393bac174f0d1'),
-      (227, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f21b79920b713be98483ecc7e1285e01b8ee9ce45a9017d84f99295416e79d95'),
-      (227, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '157ec70e9174d538c0481fdd0d2e80be3094804e8855e72acb21dfdad6cf6674'),
-      (227, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'f21b79920b713be98483ecc7e1285e01b8ee9ce45a9017d84f99295416e79d95'),
-      (228, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '600b87a415bfa538cb6eee1c451a9452f26ae25bd97e830b92522ab6d1f85d26'),
-      (228, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '2236eff0a2c497e1d6bf9d273954eb827c231e8d698dfc96c5b9a7e33f23635b'),
-      (228, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '04c9e4ef0163e9fda8a9853f477c61eb4e12395f4fabb7232c974174b94424c1'),
-      (229, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ddb33207c2617486d5fdd9648107e7f764efe0ef17570cc63f2e412a32f05a3e'),
-      (229, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b6dda03da23870a47ad34175ce12b05f78acc5ca43cec3993de09a7effaec015'),
-      (229, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1f4329c5dca456a5fd636a4c2edfb076d5c08391f3324f603d7f8a619ef58f2e'),
-      (230, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '67da25a4b411f3adb9304e36bc47c92508873b1c577088ad256ae55fb6d2fa3c'),
-      (230, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '47018d6c1418db12ceb66431815030affda1bfc15a29e17c9b4130480f329182'),
-      (230, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'a439a1e9d4dca6b9ac834c4bc5951a74d1ba3f399df7d7b58f94ec065e04c010'),
-      (231, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c42bb25cce41d4347b905d4147db4907a1d2f97aed0afe098693882b688327f2'),
-      (231, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c629528c7363992c44ce3ad4cd8457c96f99883369b71ecbe5a2917473df18b2'),
-      (231, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'c42bb25cce41d4347b905d4147db4907a1d2f97aed0afe098693882b688327f2'),
-      (231, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (232, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1ddb2c5c3113ce1511abeac7459f2c91535f02daaf1ec716974a7e1f4c642819'),
-      (232, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '5c3853b6dcb12f1821a45b6a10bff36bf170ed8ebed1e1e9b32d71e3c07d3a56'),
-      (232, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7669283866a347e6ca8d6d469b18a7b4586d76f3349e362a84672c347cb8bbe7'),
-      (233, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '451b98ff1ec1d48c72a4ed4d15e82b67ba1bbb409594c1caecdff84505fe077e'),
-      (233, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bb2ae39830c99bba5c8363cf502875b7eff66283267e8b6fe322ad7df697c6f3'),
-      (233, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'efb09c582ac4caa837ad99884c3827ecba6d3b49107ab09e7d0e91a04cd8ac53'),
-      (234, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd1aacd41ff662c09780d3e000736362ef8c7060d8267f698140bf0052088475f'),
-      (234, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '8a94f2a2e43b461dc1f01096019a9b4d23e579964390dd2999b5d310d9b52bf9'),
-      (234, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'f25f79b23640f7e6a706fca6cd50f5cebed1b6f923866f78a28ed7f9233b231e'),
-      (235, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '47b17bc8b5c45fca6f913df0c9d2be3a55ac1f82d05d96d5ca21978ed7dcafe6'),
-      (235, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '6f98576b60bb0bdf9a39437b59173586df2662baa0de9f0bce51725df8ae7dc5'),
-      (235, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '47b17bc8b5c45fca6f913df0c9d2be3a55ac1f82d05d96d5ca21978ed7dcafe6'),
-      (236, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3230a2c5e6f2bf694df50188ee6013121a421c8950738044ec8fbdcc926d78d4'),
-      (236, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ce09107c5b1d813a81388e232e91b02433e5fc56c3241241d9c0f99ecc259dcb'),
-      (236, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '546454a61463743d41747d4e8799fb621effabcecb667d74a90ada5d48fc2260'),
-      (237, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ff5d3fa4b07eb6d4b92cbddfbcf8b064dda431cca6cf7cfe3084b9fc1e19e983'),
-      (237, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '6db2896bbb434c0b8fafc2bf7854e1526292baa519362c38f516941fa1da966d'),
-      (237, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4699508c3832dd53707a2cae6122babb3791bccdd827c208d6fdda6cdad9478f'),
-      (238, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b563680d13735fb1c349b90c7f230700bfaee46fb32021dd45429744263073c9'),
-      (238, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '0b796b3391c078c40acbda29496935cb112cd8ca981de6c8fcaee94e1c259b6e'),
-      (238, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '56b5f00070a7906899b71669a243f918fb057b2943e7b3badf702e58ee0403ca'),
-      (238, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (239, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '081d1ad04df57b803dea3f51f28b539bc85cd19db1f83ca2f548205c8bdbd9b3'),
-      (239, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e59e787f299718e565200483097331da2ef5495bb3f237f63e9be75399495fe1'),
-      (239, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '081d1ad04df57b803dea3f51f28b539bc85cd19db1f83ca2f548205c8bdbd9b3'),
-      (240, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '07eab744c4893de82c26b93edd5bb0916caab6072216ee53c4973468cb4505e2'),
-      (240, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '3aba191f32ed13b0b188d95ed38944ec57ed09460333c25a11ac88ce52eeb412'),
-      (240, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3f3c6bedf960309ceb9de02c7312cd6ad4ec3c84303460781a5265525333180a'),
-      (241, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '53f9d126852c9480b5721e321b97d8cca2259c5f6f22158cd3d98e782da34b6f'),
-      (241, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cfd2f8184ed9d8fc21f548e4d374a7a26624f249a579b2d651caf82b1b677afa'),
-      (241, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd77c697d9aeb1c52a8ca3973f3139c2c8dea91cf2c0efc389f6f9dec28f62b80'),
-      (242, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f58081c648a20702f783ff23e269930b0b6bcc1fc53df73bd2c155aef20d1d0c'),
-      (242, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fb04d2066682057d3f883bb2960a91dd8423114cfbe1d437b1dac18aa75109b8'),
-      (242, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '9c0095c04ef53d9df41602f3783c90ef3c3e27cc9d0b38262d23930db6313f5a'),
-      (243, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'db75e8dd9fcd52513c06ac06485c30e1409ca161c729a2e0eae6db6d063fbd90'),
-      (243, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '3e6da1dcf1bb49609274e5799ecd5da8eb734f2d469a496571d35ef28eb2b857'),
-      (243, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'db75e8dd9fcd52513c06ac06485c30e1409ca161c729a2e0eae6db6d063fbd90'),
-      (244, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f4b0cbe28536dae677217bb470f195b1072f77dc8b723c7c6abe6ea1490c1e13'),
-      (244, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '274e1436bd1e97d7678f933b72cffa80d7f3ba735332910caa38cf72c962a03c'),
-      (244, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '079d67b33927c57379677169776f0db3459df564ee5480ff1eab0b98cedff8fa'),
-      (245, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '93f2b2ca7583c005d6105e15072fc159a0cd4f8b99a78f660f97f680bbe60ad1'),
-      (245, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '57388b1a51448351d10e7abe2288b16069894a80ca63619492373f97362cc9c8'),
-      (245, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3e64cf02d846a0523164b7428512f718e9d3a114c86bbd0eda3295871145ae67'),
-      (245, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (246, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6e18b50b29c5a49f7adb9a1107519b9551d9abfcca27c2fa34e4ffc891d0bc02'),
-      (246, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e40ef3ff120e083a9f768b3497100901b77817db07cd129f132211135b460c49'),
-      (246, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'c4652ef949a92c99907183503484522c531c3d4d374def8913a48c6b06995f47'),
-      (247, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '388d24f316c84c6bf203c52a4253cbbb6dc090782f042cd67b17b634164c3d90'),
-      (247, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '98f38bcec9cf196decb301d436875cdfd228090ae36e6e4ce4e23fb968461ffe'),
-      (247, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '388d24f316c84c6bf203c52a4253cbbb6dc090782f042cd67b17b634164c3d90'),
-      (248, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '29a0f00cfac4d84d0108201e840f47f744de0b1a75cca3d9c2c09f2289dae742'),
-      (248, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dc6d6d4d00a40cec5f7ed27e306bea0949788eee39b6f3ff67127ac011285a3e'),
-      (248, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ad33e189ef2773a92e221a55c8b12a1efa69bd5912e88ed57576d2058b35dac0'),
-      (249, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '81e5c06ebd1b43831e289937adf8f75f847a4e435be1b4a679c3af5007785148'),
-      (249, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '45d76c94fdd68cabe845aee36d7986a33644cedc92e7402858710cbad53eb4bb'),
-      (249, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'cc7620fb9693d071ecc8d17c373d3f53567b21e3552beba7ab1a662d063baa0d'),
-      (250, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '36598967640209d6ff0ce2f8738ee3ab5ffb83bf661692a7029532685433c046'),
-      (250, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '8bb7bd05cc4f248b7efd4bc8bc285a93eeb267ad461bc6cf2b7b6cd47122a9d2'),
-      (250, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'fddc2d21ffdbb9a3fbc1caae6cee854a6d2a4fe64dd4db44fc532789a75d3902'),
-      (251, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd5682a65a9f49b18e4db9699d8a767699f6a81feb4153fba914fd1beba296e52'),
-      (251, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '98c07bf20f0c59a13fc4e4358a82e6249a46b418317f5763fee1712010fa202c'),
-      (251, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd5682a65a9f49b18e4db9699d8a767699f6a81feb4153fba914fd1beba296e52'),
-      (252, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c56aa4d6571eb4810731c7cfbc46280e08e89489b7ff4447d986c4d04c11adc5'),
-      (252, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '97f2e2fbd7b5052c0e870088fca95cd56e9a4adeff515eca21ce14bf5aa9f414'),
-      (252, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3933318f4321e87b9aa0f93cd760aa6d2484f95c1671170d3c18a89d073f483c'),
-      (252, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (253, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'db83b6fef834d88e8ed973e7fc6baf33caa6eab1315a2f3f2c6c59a6b7861986'),
-      (253, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '41fc18586f8beb3efde30a6090752377c8401069a5952e1acc52356510c90a0e'),
-      (253, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a9cd9096336baa1c83ba2e464eb08a47b12973c96c1e1d35266ef020eba77e94'),
-      (254, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5fc066d92e8b28090af8ad37fcd2d81899df623a28fa2b58a759e7224f1dda08'),
-      (254, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '7caaa236be395af825870cd5233658a9a106468b64c71679523ba376cee2f98a'),
-      (254, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '875fd088c3e4fc6a48ec6d7f9b897956a5ab6a83b9710de550857731c1311fef'),
-      (255, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f81e8a9f9d889e47bb5d89cc8bf73fb1a53acc59adc0f389e56a00f21eb4f66e'),
-      (255, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '7501de1cf7d4dd5371ae844026889fd7622ba8213f518752459b52da46dda894'),
-      (255, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'f81e8a9f9d889e47bb5d89cc8bf73fb1a53acc59adc0f389e56a00f21eb4f66e'),
-      (256, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b00bec1af93d68b18ca833f323ddc36a120fb7bf051e91f891bd6ff02582dae2'),
-      (256, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '2a806d20f53bf4c21de434dfada577a20cf8cb11a9dafcb0eb14a8095675e174'),
-      (256, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '00e03fb75e8eac479ebf6339450e643158e8b9ec5bdd34fd2251346141908020'),
-      (257, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7326f26e64880e719f73f87f1ccaf0e095bb42782a2e1745056dda39270ddb1e'),
-      (257, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f7c0741c92d167a16d71581a746f4a5f3ba6ce9acd2442766009ac5d7503f27a'),
-      (257, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '653fbaa2b847142057bf32467014fdfc379a3eaa245cc5f1575ee2e8dffc4bd7'),
-      (258, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '476f97aba59b174cbdba62b0b64489bdf8e0c6ea24d4f1ca92b989404aa39618'),
-      (258, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '73c9211523bf00686146476936f59321bbb55b7aba86117fcc6206f12ee658cc'),
-      (258, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'bfd0802834c451dd99163eda23da788d4eea3b9ff3d08a8295f623932f459c55'),
-      (259, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bab954512b04138d8ad137d944cd3c3351921f341c5fdf1f8d83463b704c3d8e'),
-      (259, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e825e68747b1b4e55b5b20a8fe524a9815ba67388c29b3c29ac55af30dc2f5f6'),
-      (259, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'bab954512b04138d8ad137d944cd3c3351921f341c5fdf1f8d83463b704c3d8e'),
-      (259, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (260, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd0abe13d8c977977d8a3f7acfc12376fdb0c75ea89d1afb46aa58b023827d751'),
-      (260, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c262ad2411d93bb3428c1376092eb6aa6159ed5010f3ecb75c4c5169646778a5'),
-      (260, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '102c80b76a24117092c5a07318b9a266cff9fbe3f4b1d48910b885157f630ec1'),
-      (261, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8288f23d3a2e49a6674bce807a549cde0f4a1ec2d54b1e15862b1a4fa49b4741'),
-      (261, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c4f9912a44f8c1ddac1f36ff921f79c116e31121377444609d76e17c9d55ffef'),
-      (261, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7e611c68986ec17ff01fb35112e9e45a330cbb48d49f57f5c6a3fe6207eb374e'),
-      (262, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'df3fcfb056a671c19a73302dfcd291640b087b87d851fbee880ec1b417a94972'),
-      (262, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '5fbebb261c73b7eaae399cfb21ab1378e77d5126ea69310524435a267c0cd331'),
-      (262, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'a8a9f77f22391d60664862b91784956b36f4fd982d02777b564ee16faa0a0d10'),
-      (263, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '21da3deba1fd71c2a2850a1e661f5e6cc2d855327eb0080da042a87634385509'),
-      (263, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cd9610dc3a3563fe3ca6bf0cdeef49d2e3be90f45d0f43dd607b3181ddfe641c'),
-      (263, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '21da3deba1fd71c2a2850a1e661f5e6cc2d855327eb0080da042a87634385509'),
-      (264, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bcd6e574ae4a833b90eb63476c17d808b7860bccf14610e9b34258dba2aecb7e'),
-      (264, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '0dd56df8f8a61cff2a42a7e7eea46a4e380afc04623a9e6ef922637dbaed7eed'),
-      (264, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5d5c91c38ee9b7d95087e8882f3b282bd87eacd6d8460a33b0e7e75a00a979d0'),
-      (265, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cdbfa71fd16c8dcd767b5649cd528b7edbf9570fc2c14a87dfc08b61c4946cb1'),
-      (265, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ba6fec0c2c5893f629adc787ce1e978323f74337c729acf8a77889f9ce8efe09'),
-      (265, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '587567df32922b7828029109474659a535741391673ee19f8cfc11d902f3b302'),
-      (266, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '49eb30630690d8a67fe10589e79085bbb9ade400c6ded39ad824289e24124aa3'),
-      (266, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '941a8a6d84aff6688b5cd35fc6967f5cc3cbcb8771b5ff4ee5398a2756c08e03'),
-      (266, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '6c2dc3472127f2259b095ee2dc86b04ac3695d6bd3ade367db4b06d78e9a3e27'),
-      (266, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (267, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9c9eb5a0e0eb75a62fcea8b4fc58100ef856fe9827e333905f0f1fd1cf21a55c'),
-      (267, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'abb57cfd8324c24fd35c8a66b3e4f9098a46a1fcf0b2fc9b9c6ebd6068265a77'),
-      (267, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9c9eb5a0e0eb75a62fcea8b4fc58100ef856fe9827e333905f0f1fd1cf21a55c'),
-      (268, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '66e6a271c75e44f08530db8645d4681518bc0457b1ad2166a88bc857548a660f'),
-      (268, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '875b29820b9df76e0c3d8795b90fbfe88fef7d95e62b6e655778398acd79fd2c'),
-      (268, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3c73fa88dba0de730aa3ffc4b196f27e8eac82b13f3d3eb00b3b9b57267df745'),
-      (269, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e93ee958d67b854504a4cfc73b7e0e943da118e7d26e1b27c247727de5fb3657'),
-      (269, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '566724012ff1a9526666fe342cf4d5bdce6c4198d681639bca63c3bf8371f8d6'),
-      (269, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b31b2331a9b8b9c6c5082b530534eff0d600e5f949c3354aa892b233d2db8c11'),
-      (270, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '567f4823a75af5399c9f89da345306302e6919f7be8f9a067eef1e08655f17d9'),
-      (270, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '117d75425b6a12c2e11915be392861dda30d74c2fac50a85ae783c0e38e85ba6'),
-      (270, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'a4878cc1a461e73d17e7f16c92573ede8aea5c6f9bdc79b6b5a0d69d4139fc50'),
-      (271, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd40c4af497578d734b603e663e83255612f76ba5dd78bfc60b134fc3e4829a0c'),
-      (271, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e4ef5a8c536efb486cd4585e51a9f5f299b9c6c2d889179d57cd273ebcd98489'),
-      (271, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd40c4af497578d734b603e663e83255612f76ba5dd78bfc60b134fc3e4829a0c'),
-      (272, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '85bd554d05f1a33cebe3e72d5f1037b221391bcc89c2e1e83ef87c2846f9c7ef'),
-      (272, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd55799f1b1afd5c073ce6ad110fdcf992d2d0c32cfdbdee153fcdd515100f2a1'),
-      (272, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9bde025e79fa9698f504f27e9a25e1c8934108907bbefd00a612174ceb023a63'),
-      (273, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '990fa2bd7617fdb038af4598698497ae4e59b6d0237398e91ca8e4727e2f8a5f'),
-      (273, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'edc498d5815d5c7aefedf435174791ff5c28225c9538006177877329a756b6bb'),
-      (273, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ce2c01b60087a9441aa01ff4af4748136681f3101e844bf85b8bce85387ff6fa'),
-      (273, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (274, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5862c50cde26ba62d403b7f4d3a1f9169fdf22f28b05ac3aef731a4ed0aab9fd'),
-      (274, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '1d0ccc1c0f2c98be51e3481b8ab48d252881e8ffbbf7e958ee34eb44c7265db8'),
-      (274, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '3816a2c6a4e7e61d1662ddac3d3cacba7fdd95771ec63dbe3518655c830ce4ba'),
-      (275, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'da5fdf83e4553bf1c79efcfbe1b7af626fdf7aef91103f7ae0a1fd6cfc78eda6'),
-      (275, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f548d464d77b89f4dcfb570fdb8418c1bec562861273749e01e9ca22c0f30d3c'),
-      (275, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'da5fdf83e4553bf1c79efcfbe1b7af626fdf7aef91103f7ae0a1fd6cfc78eda6'),
-      (276, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2002fee10a115c84d2a40c582bca81806bfb207736f6d8cfa4722c527820f181'),
-      (276, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '0ec84e09726543677bea49b6a93a9c645b13304eea6229e11cfa30d75c34b3e8'),
-      (276, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '65715bc93d2e40eda798378641ec3affdeb3ddb100540c3cce66ae62c7aed415'),
-      (277, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '446f49b9f456b4862e3c783fea59f10d5a9ee752c141f308cafb5bdd7089d263'),
-      (277, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '4cb52e7b2daa19c437431d91723a2c0a781de327afac638c7989292a7ccd2064'),
-      (277, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e3feecd0cc839f4fa506cf1dc1f7c18bcef372be5bdf0c48745b62c2e1f6ace2'),
-      (278, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5987a3ea33fc2b5d898e41eca9a9ccbd102d976f2c082ec3706956c88dfcde09'),
-      (278, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '0783818df67428d813c90d45afb8741b8f221e6c149c528f784cc65fccf36d7e'),
-      (278, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '67fc4ca8d4e480293a48643ed6be44262e32f1cda151b088a8da13929642f9b0'),
-      (279, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cec29598e6c76332651b01aecf5960aef0864d6e262db5450d7e057b073b0fbf'),
-      (279, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', 'da996a76eaee4a55641a3b2c73dd5a71556cf0e02f84bcc6d23796b77f0b91ee'),
-      (279, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'cec29598e6c76332651b01aecf5960aef0864d6e262db5450d7e057b073b0fbf'),
-      (280, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f3c029fcf758d13cb7eaf03afc41f6c759c950bf17f6faac6ddfbe0ab9a1a2a7'),
-      (280, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '0b6d202742f09043c0ee9bf1a1eca9b1021d4ccb5bbab44e39d07ea37693faec'),
-      (280, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '823cd4890c70c99aa7595c52b25bd306d793e731d83395b98dd983e2295fb95f'),
-      (280, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (281, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '397d938c14bdf1445abb1f8a0a0e472e0035b230b20ad66c182fd26cee035c9a'),
-      (281, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fbce5c47cf93c8e23c85a3b6178bd2465353fdeb476d4288153efda98374d3b5'),
-      (281, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e0fc3ddb838e4efa159c67ff1a0693858aa19de7b698ac1550b7f483e73616d0'),
-      (282, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0ce1a3de99a72affe510f62134a2cb7f5ae314248adee7ba3126e4dd3b9b6131'),
-      (282, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e51e26142f1a0cb71d35c082da544fa851f28006ef26bad70679a8d534c63102'),
-      (282, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '3e13851de5548d755c746ecfd1a68bd6bf2bbcd5fc387ff21f7c5cf0d3b79070'),
-      (283, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '16d93cc5bbc4c7e4fec366332e7e602e8768477c4c0a7432222e238dc24ca306'),
-      (283, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '7f719bd3771038f97ac7c4fc3ddfaa9fe5577e53ad4d51bd53a14c950a6d71f4'),
-      (283, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '16d93cc5bbc4c7e4fec366332e7e602e8768477c4c0a7432222e238dc24ca306'),
-      (284, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3275ce4bc2e429e57743c97d210a2d58c019bd3ec4acdcf91f8b84e87d04516b'),
-      (284, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'af44e5beae2c63cb9b5e975f075bfacc524b10a21e93abe74d95bdb8fe2ed0a1'),
-      (284, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7527adc674568cc7b804509ffd3baa64756fcd77f71b84b8f3cea12b82ccee61'),
-      (285, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '53339b026517aba14f0cd06a033a20195fd7c4efc9c7ee4f1a6c551b4af3917e'),
-      (285, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '2c464f86dfd775c564c1fbc2d4ad23858088874976812dd51eb121a00f946f0d'),
-      (285, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5d18f47573854c9a082c42521431e1b017e199281f10e4546765b856d7af2988'),
-      (286, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '431d83bc4ea99b82b94542e02b744d3917143bbc9d96cdd71a17768fa81249a2'),
-      (286, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '5d1b7e2f8337135a5359f751396ce28c8375486ff0188fa566a777d9952a8d15'),
-      (286, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'e68ca6f7790371a3d94c9b985c0cfe5e1d756fe145e2e8775afd3cb3c2911711'),
-      (287, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '52d50a455fb48abed8187795a11e4871b73ec6a220ab735fd7bd32d458523522'),
-      (287, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '757156c133cd52b0c4d8ba67ae10af669524971ad3f794d13b90a2f702112c6f'),
-      (287, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '52d50a455fb48abed8187795a11e4871b73ec6a220ab735fd7bd32d458523522'),
-      (287, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (288, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7011f79352b7bf4ee566a24799709bbdbce5250a66eac8b3b24f23a6409f5326'),
-      (288, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b63caa22aa065a2a6e1d62a76674fad13b6a2811fb6b5c813f856e1e5bb1e87d'),
-      (288, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7c2dbc670aecff0c20fd3fd9a33a3fc11c5707abf8f199693201b810477d77dc'),
-      (289, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fe30599b4a6402e77c55328b7f0ae95127c7f7188ca3bac58cead59e61a83ede'),
-      (289, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a46a09b3ada15d75ea3cb8d5d4da346ec86f71c3f5284419dc32636a376bb7e9'),
-      (289, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3a1164a825606b2028840a9b81c77cd578f93fb06b8c6cba438faff37927c14c'),
-      (290, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dafbd8e3d013b00f2e29ed094c4aabedbdac848f1c3796bac3ae7141795d2ecc'),
-      (290, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f763629058403810f514003ed16c78f2a171fec84b8c97304c95438b2156b8a7'),
-      (290, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'cd00e292c5970d3c5e2f0ffa5171e555bc46bfc4faddfb4a418b6840b86e79a3'),
-      (291, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8fddefa78b51b39ef06448229f773456c4f38a66289d1a0d16e47e00bd20efe'),
-      (291, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '95d3db1fc6ab139e715b5cb6f21b312375e07043d314fc0c1e826a7446e1ba4d'),
-      (291, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'e8fddefa78b51b39ef06448229f773456c4f38a66289d1a0d16e47e00bd20efe'),
-      (292, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e5ae151e2a1b06491617767dce8a4431f566880a608abaa560ccbe476b6fc942'),
-      (292, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '3bff51b2741a971a34c4069b24adced88f1489cb2360849fa82993751b61df74'),
-      (292, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a25a31ae969c0ad1349b28cca2d30431dda4a3123350d834f3142c3447de0b18'),
-      (293, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f9af5bcfffe48eecd987b3b8b697434ac7fd7516296641ae45a9d44a7bdd2871'),
-      (293, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a667521054e1648b13702027c56ec00aeb08385feda31a38bd1823bc0704fd8b'),
-      (293, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ba125a000ca7c42906c8b4538b06ce73dd88102eedc3ca07a8080df8d723c182'),
-      (294, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a9fd1330b5f9a8d8cb8ef432778c61c37084449335f1cb65ff949dc24cb87791'),
-      (294, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '3ad07b0381791081367508b6281dc1d873b93a6f0077386dd2b59e4bb1e18989'),
-      (294, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'c5b06100796e6b03102e63a77fe40a69443ba6cac8ea2c4f31eed528e850cdef'),
-      (294, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (295, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '819be95d04e04eb62fbe5c35e35519aa97ba522625e223f7b3889506d5ed8810'),
-      (295, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '66be4495dfd32e1d821d66931f9bcba07fc6735333d99e946e43fbaa067e4e8a'),
-      (295, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '819be95d04e04eb62fbe5c35e35519aa97ba522625e223f7b3889506d5ed8810'),
-      (296, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '70cea611b955b66788dc05b5e168708d3bf3842200039443b5879eadde738ba7'),
-      (296, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '9fcfc3e010510cc02d41b2038df8998676e2ec685b015ae366a604e55cfadf6c'),
-      (296, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '087a96a122f2a9b164d82b8d7ea3d13df98f3a2d54427cd233fb7f75ebbdc628'),
-      (297, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'af0372acff866ffedb16e041be950d2ccf157d67398495d215c9acf0e7eaf777'),
-      (297, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a11b8810caa8d565e049425bcd48526379f7db2ff3b8e5a2b0dc84b686698a0f'),
-      (297, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1977233648d84a00b2c81253168a1763937e8d83ff6ebab01004405cfc553e34'),
-      (298, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '82eb0f34c2f4d389701a272abc70b6859a0884e12596ab35521f63159a6f8463'),
-      (298, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '9b0a8fbcc8267a9a682a9818d7eae1b68d0becaaa394687e9efa134238106c36'),
-      (298, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '7119f314d3837dac54bf984118de657f6f1e6dfd2a2b2a20510454f762dddf11'),
-      (299, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0dedfd81e9aa0d06dbdd6a2b52683631d2767c9c545243f4fe63e79f23909dfc'),
-      (299, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'aa56fd138dfd6bccf2086915023e4d859c66f74618665d8cc5470a8c62dbee4f'),
-      (299, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '0dedfd81e9aa0d06dbdd6a2b52683631d2767c9c545243f4fe63e79f23909dfc'),
-      (300, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '110a3d7805b4ab35eeb6e6c44b5f8f8387c9129e8f62346b0166c3114a759c66'),
-      (300, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '65af9a4edff6345c8a150ec985d50a15b2d587c9708cd57d2697686d34be5242'),
-      (300, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f1a33115f3848a465df2d7b1d7e48355cc56f0d6bc52fbaad40928383eb6c894'),
-      (301, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1340952368573c39540befff9429ef5bb78aa610f9fce41768b302139d5c5585'),
-      (301, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '0c3e822e3f8d75b09253b8c23c03d912c35ead3dbfeacf91d23f471b32920613'),
-      (301, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'fe45ab8978a9ca929f31375aa7e14116e8547e06768be6f8f52d7b4c3fff5b28'),
-      (301, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (302, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c7ec1fcfc560764b15aa834859e4290b743124c0924cc08f3dcfe87b471b0f78'),
-      (302, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '83b0f982f8b69046626e4d01af0ec43fd9fa534c262adc7e22254f04da13a3b1'),
-      (302, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'c9fb665dfeb2e169ce401371ebc5b7ee04586e1e447c1c2549e0fc29da7d3be0'),
-      (303, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '441a269d97a4f50c993e5a62d1d6257b28ab3710dfee7f5d80ee3e84d5570451'),
-      (303, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '0fdc73733b95f0c4fa50927feb475f489ec39fa183aba65a90637536badbb7dc'),
-      (303, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '441a269d97a4f50c993e5a62d1d6257b28ab3710dfee7f5d80ee3e84d5570451'),
-      (304, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9226da60fd1ccc7981af739a533f455f5b9a71e50fb684fb80c9bcca96711df3'),
-      (304, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ae0cf5cb04919a2491caa744c4b50f09853fcab60dc2b84538e9fe87bf1e4e1b'),
-      (304, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2b72c36094cdc32182735952f33f8fc5089d0187c53788a0d901b9dfd30afbc6'),
-      (305, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9ef4e36baf7640bb1d62fbba2a515693356a86a12c9274cd4b49651f02b5dbd5'),
-      (305, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd7e95977cf8f7c085393dd2b33d8d667bd3b51e2ee435e8c764749d89c246d97'),
-      (305, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5edc9a8a01712e757303575297a58f4faebb82e742f099a1b9b4b85c31109e27'),
-      (306, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e12fe983f03e090199d0adb28f8ed36c009add9dc1d48634e56c0e66b47f05af'),
-      (306, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ac4dd36deec3a77b0f8d4c7295132cae44ff2d562cad9feab562fddebe88db76'),
-      (306, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'bc191b056401eb4232045937c11c2c474a33c9be2bfa19541d27f556c6a1d1a0'),
-      (307, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '99c5f84f6010346ff23d570f8071bb47e75b602a84cb4e5a9a82f58852e2b7fe'),
-      (307, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '6d7f3f6b4eedb487afa9aa708c1cfc35850657c88735c9300c4d132e4c469b1b'),
-      (307, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '99c5f84f6010346ff23d570f8071bb47e75b602a84cb4e5a9a82f58852e2b7fe'),
-      (308, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b574a285ff90f028acf554be28b4f496a2354590d3fe756cdf91167a3443385c'),
-      (308, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '4eae3000de4d24888ac89d8d7b55beeba0387c54d1eb420673727048844b7b88'),
-      (308, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5a48c563d9b7adb875fb9d647855596405659a4f61f07b0142caf4e5639df24a'),
-      (308, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (309, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2e3845d7adca70f47079d383442d0256bb842ecbe8eabe4929b98338269e45c4'),
-      (309, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ff1c2598e04ca12d8cb2d1e1374f5bd0592234d80574bc4a0b55364719d59255'),
-      (309, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e2cc7a26b86841a048d75f28d75ee9677e20fe0643e7d5dcca851096702d320a'),
-      (310, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '09eda8a0f7716a1dcc83ecd23f96ff149c1d58599d2b3372ca5093a67982c6ad'),
-      (310, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '7ce787eced7f1f5839deef41a4325aa3986e4c2fa388836f724ef990ad21a27f'),
-      (310, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'eb2cc398593ac59fbb5d7e86ee1b9edd0e597f332a0022886c9fed667b61aa42'),
-      (311, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '834a033d3064818329ebb001c854c31b5f20c07b01ddcea9a5d5ddb6fa73b616'),
-      (311, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f13464b4f5705a90df5d2eb06354e37593e91661c9d96b5dadb538b6c3a20c70'),
-      (311, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '834a033d3064818329ebb001c854c31b5f20c07b01ddcea9a5d5ddb6fa73b616'),
-      (312, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dbf98afaead47c8dfb6ec215321d91b2de095724b4cbfcbef6d43ae394508189'),
-      (312, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ebb5f0939cce8cf3c8a60ff633e83c704d75645e22d975ec7b7ad3d73d325529'),
-      (312, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '020e463bbc5968c342a573ad24ecf0a7798898d4bebef9d4c96e8abee62796a1'),
-      (313, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f03bba541e9c661f67d84e37bbffe186296de9aa28fe5575e24756497389f36c'),
-      (313, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f35937bc8ce1a1a13996ed1ab937b37b194c824aa0d656b794abf35a4f86f79c'),
-      (313, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6fac12d6bd9270e25bb065332e3e063e2d848e0e7db51314be8e5a069e6472e3'),
-      (314, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a5386dcdb5ab34bf9484dc63da57ea1ddeb894f9b909c0e9443a37a08ff540db'),
-      (314, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e5bdbb14664d27cf3ea722e0352115d071ff2065c75493b34bd0a447a46214a0'),
-      (314, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '30ba3b2d1d23df7689e276dab7de418973d08e2e9cd69bd0dfa0fa4c9a87d596'),
-      (315, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '51f5bc4247948e2999bed1d83c5415570fa78dd45eca0a42eed09af1c95ccd37'),
-      (315, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '8f93cc8e6ee8eff8acf743be9a1699dfa563218b0be44d1b6428b339ea98c2aa'),
-      (315, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '51f5bc4247948e2999bed1d83c5415570fa78dd45eca0a42eed09af1c95ccd37'),
-      (315, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (316, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9ffad41e1ccb02c51bf32c98efe7ed78b2b4f7f0a9bf62f43d365d81ccc05f57'),
-      (316, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '022facc35dc29ef5ff16aeddb4a5397a79d0544e34ef4b927a63fb19be607ca4'),
-      (316, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e7dd0c2e239006704c7ea6a04c6cd96378fa3fd637e152eee9f2a0e25535e3b8'),
-      (317, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd30b60239c980beee402434152c2727127677ee296935bddd12352a7e1c0b493'),
-      (317, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd8dfc424424978b5606a005257b236f6fff443df4f34a39e132e404b97b146e4'),
-      (317, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5c2f7bf4df6a69323ca06f9c59e13f4296037ccae790a99bddfd634051edb1da'),
-      (318, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e65e5b0a129a22d98fa4c5496f77d5b284943b65a0bf16d2a722927020ff18a6'),
-      (318, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '03e684a9155a968e63a60d907b428d263b080a7027624295057f76c6812a9801'),
-      (318, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '716ed4cf0b839335c2c8beca54216bcfcde08b38f20cf7b415e6a0a7abf928da'),
-      (319, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'eb5521f29f8bd5fa8fbbac41b51cfb3ebeb35f23ce101601f5af96e6c1665722'),
-      (319, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cd2f8c0a23c6e58be2c35da4e1b79355ef670cde1e5e253002d2887f7fd19217'),
-      (319, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'eb5521f29f8bd5fa8fbbac41b51cfb3ebeb35f23ce101601f5af96e6c1665722'),
-      (320, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9c95ac5939cefa20f28e82b6e59c1cf6bd2766e4c8905777c32a87aad8924db8'),
-      (320, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '79f216c2e7c29c7751e53d1e1c16f9481cc8e7446a4e70a19fa073a5e8804680'),
-      (320, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a6386c02eb312a697a4e690a84903e133cce3456d7989bd0a6d7036d5a75c1f9'),
-      (321, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b2115b027ec7726643180841565b6eab625e43005fc079421a9eb858a336bc74'),
-      (321, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '90c70e1d438137658fe0a59f5725986062e10cfe2be6bfd00633b9ee734bd629'),
-      (321, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '645866dab3bb7c7500d93738cec839430ec1d697b099f2d560cb2b4017bc2159'),
-      (322, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9a2c8cf0c7d1195265a848dd9ce9cf8faa2dbf0caf9d1cc3bf60bf889b720b84'),
-      (322, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '763b3feb85fdfebe89e0e10d55a19d2e9a646751068adb622d07db3ccc65c6f5'),
-      (322, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '7fd37128dc4e13137641de045a83be443a4f83e8dd2bc0290dd86409b16e13a4'),
-      (322, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (323, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '56a0029cb6285907ad446b7477e93f2340632048e4cc9d5d11718c7931489a6a'),
-      (323, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c26dc53957f1befcb3962e433e5952a0b1b479105346e202fff2e3b14f59d1cd'),
-      (323, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '56a0029cb6285907ad446b7477e93f2340632048e4cc9d5d11718c7931489a6a'),
-      (324, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dd361743174a882f95c79d3ad4e6ae17c34ab27f545437a938450fa6d7886bc6'),
-      (324, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fef854013c93f85e025fddcfa4325d4dc82ff5de55f27b2657f882bbbe2f49b3'),
-      (324, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '345ee11df72423d2249c1f4ca140574272884e26525d377f8d0ae28af13308ff'),
-      (325, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a98406719ab1bc8fa86bae5638ca217770f78605783d102a37649f8363b8845e'),
-      (325, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '2db5aae1a77fd65d879dda91e1dd915465ea91905eeb9677fcc097a26e1d5169'),
-      (325, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '59fb8ff7f233c02b802b44d9d94f8a04d1326a397a4c823213f584593b6d166b'),
-      (326, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b8d9e5ea40d83b5d5ca736bbcc20512108c15454d71331c461aecb0699542b75'),
-      (326, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '3f395c6074d21dd6b78a9cbcc823c053450566f36e485d654344aafbc823e1e5'),
-      (326, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'ea2527877ad4b231a0ebbf060cb7016f1722baf257ce6b61078cec3adc04af70'),
-      (327, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b8101f5924027314825919234bd0caaa8640eafb235756e9e36faab1588c9b83'),
-      (327, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '074eede195189cceacfed319ab4ff25cb77dbf026d92da72c21872d884fad3fd'),
-      (327, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b8101f5924027314825919234bd0caaa8640eafb235756e9e36faab1588c9b83'),
-      (328, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1655bf2a75586bf1a26fb3d023ce805810f275a7517e05861eea335232345ece'),
-      (328, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '498873282328ff447b1931366d73fd4f7e59d67a2b2f89ddbe97138b8e182183'),
-      (328, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f7b3ad1146ed318d0c35057bf4f1f34fe2f783522c03d1ff9843f0803e9aa07f'),
-      (329, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1bcf9f660aa24f24c1534b3550094051427b57dc72b983eb78e5826d08a7be81'),
-      (329, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'aabf8664da321c5d38864a64e811eecf43b8c497623d7dd4b7ff9454732fb10e'),
-      (329, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2b7b33a024ed86305f34d22f2e3369e9f6fdcc4735e1d5f4b4ec407e070cc5ec'),
-      (329, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (330, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '83387ad7d65c7f0373dd4c2c5fa0ba8d861e789557097d11e19ced13b88eb466'),
-      (330, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '0032a13438951592a3020db463a72e5b74bc019596c4055a97bfca40af7b67b9'),
-      (330, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'fa807c957eafe34b850cb453a096df2e5899f0902a837fccd59f9aafa869fb44'),
-      (331, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6942a46262230fd9f927d93ce176b8355df67c0daeb1aeea72c846bb8823c5d1'),
-      (331, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e6e73da3b0c67a0c231e0ab7905ad0dfc54b9c3d9d7321ef74daa432cfb3f156'),
-      (331, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '6942a46262230fd9f927d93ce176b8355df67c0daeb1aeea72c846bb8823c5d1'),
-      (332, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8d2e4e3b375d61fa130d460f7e8de1e677b0abab6a4760e30a33761ef5aa04e'),
-      (332, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '19303107d1be0093fbba11755619801fb38d87736934fd58efdcc536df2d704c'),
-      (332, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4a0723c57ca359c18c7fc3231b96a750c31df81b9188cc5975a7e8733fd6a6e5'),
-      (333, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '64ebc6d89ad921a797e1a024210214c92bdf99ae5069baa1ff85a706df39e476'),
-      (333, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ccaccafd1e033264de006a926de4b795a6fd4bb7c27dfc6d675d43ef837b425a'),
-      (333, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'fdbdfff9d6fc905071163b652496c5421753e5ad3164a4c570c052284c31db5e'),
-      (334, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c9e4e4139b989e31dbbe9b96fdff13d77f05cbed7fea74b27ea407a627c2e999'),
-      (334, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd168e7da86f0689ff8d3c8ff1c508bcd92bf9901ab93b494ffe536eb9614b01c'),
-      (334, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'cce595dc28b5639da2cb4e618ec7bfb88c6c40afc8429ef77febbdce4d6084c5'),
-      (335, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'eb0d1726c790dae8b7151bb06bd00c567c1d888c3a475b7278ed18c49b87ff5a'),
-      (335, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd0ca43b6a601b89f9457c60008a1836cde03cf76eaf6eb0656c5229d7b8496f7'),
-      (335, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'eb0d1726c790dae8b7151bb06bd00c567c1d888c3a475b7278ed18c49b87ff5a'),
-      (336, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ea2ee2b6b2b3fae15dcf6af87ee4811324aac7ed355103a82dfac068129cfc3c'),
-      (336, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b0c8faf9027feaff9300fb6a1c97a4a50feaf5e4a2740b6a83cec139753c48ea'),
-      (336, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6e18fde04b4f4933c1fe82d4a94f1da78c7fb7ecea9ad438ee13c614594908fc'),
-      (336, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (337, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9408a11664f75e5af416acc070191213043227a7973a6ce1c56087da233fe5d7'),
-      (337, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bce543c37a074b4b084aebd5987c8a22ee3c677d50afda22a3d367f82783b33d'),
-      (337, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7f51a155895c4706f2fcb6d3dbd809f252f37c2c62cd4ce32b2ee57893d65fc7'),
-      (338, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bed0765d60660d58312b6cc7722b8832b622c382ef3a5a506cf0c69a57a300ee'),
-      (338, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cb6b7e6dffe65ec9d55b0855821ad25969cab1521d962409a4ca638f1e97ee36'),
-      (338, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '1a68809b446d446443c5e3090f98875615839843cd48f06b2f6c8749e0d9fc68'),
-      (339, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '81edd7ab52d267062d170487c6423fa5d9cc69124da68e180c46745b41b75a58'),
-      (339, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '66f408e16e8212b6d5fcca03b39f3c97c70a7718901b1c175c49e627d7c29c14'),
-      (339, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '81edd7ab52d267062d170487c6423fa5d9cc69124da68e180c46745b41b75a58'),
-      (340, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '10613f11fc6c076cb53f8f25dfd5f3a5c971956f0473d06796134c882310ee9e'),
-      (340, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '8c861bbd5b06827768e6f421a7b49aab9674c9282e4d35ddd9010da8ba129748'),
-      (340, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1d05edbca67c677cde1e103b563510ccc0e681014d30254dcb6ae81d924b6ea7'),
-      (341, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '60486b70f9073faacbe3ab14b58f3e65430e910b7c38d9f8331ffed794763311'),
-      (341, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '11997fae284a2d0addbce4d427f836426246090920aaa21b3af76b8d389273fa'),
-      (341, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '87a7622900f3332a92c348d2bba2e0804782eee4350e4c9002702113a481d11a'),
-      (342, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f52501a6787bca82d6cc98ee56ce814fc9d3621dcf18bc87af783bb8ab5f0e07'),
-      (342, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b220cf0a99e4711c0460629368320864f039a4effb3ae57101abd1b9417d3a2f'),
-      (342, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'de1da8f3791deb5ea5a11c9a67179b1e240aa14979524a3cc28add0e3612c0fe'),
-      (343, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2e6311953c1c341c56b124100d04e09692bb22c976439efb109b3d3ae08ee9e5'),
-      (343, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '5fa3ce297b7641ae77b0580e90f7e742baf9b0a2c592243bf232220371825037'),
-      (343, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '2e6311953c1c341c56b124100d04e09692bb22c976439efb109b3d3ae08ee9e5'),
-      (343, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (344, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'be42965af64f443a10564122fa96ca45899f9ab0975a9ea74d6ba91dfb90aa7b'),
-      (344, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a66d143b9c514c51ead60524f6b921ee2f15488e35d1bf2d1b6eb078ad49a837'),
-      (344, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5f971f59a9d9e0373796c3dd45bf668ec14c17a755a7cb7d7c7f01418de6e13f'),
-      (345, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e6c293d050de0b5363edad7bf81c4197d0c384bd3bd2a66624ea8c44768b9dd7'),
-      (345, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '745cc9225bf41aeee1a0ef9b30ff4b410c84b9de67dc0e5f4941415944a90eae'),
-      (345, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4abe1615262f80e2b0424b450d8827c56122caebc5d1a5cbb5c4fa1540d47d25'),
-      (346, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1810e11e9fa073515dfd4a8e0ae94acb8694c5fd85731707a70896659f25c2bc'),
-      (346, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bac18e3c009c1693a21b449cba5ae17ad13ee780b23c9deba091ff9f2a279afe'),
-      (346, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '3fea5eb037f38bcdad693ba4ca4c9b7718fd078a53c711a322f90394c493c466'),
-      (347, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '33ccea1e195825a6e6c8ff7d2f3c848bed8178947943e3aec193c7c2bec18e13'),
-      (347, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'da594ae0d30a20b65b0841d83425bb785c685cc9a96e695ed9a3b5c1fe1d338f'),
-      (347, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '33ccea1e195825a6e6c8ff7d2f3c848bed8178947943e3aec193c7c2bec18e13'),
-      (348, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '11133edaedaf33a680227e1b602f4e0bd8418f4147d56f4adc6459a85017b568'),
-      (348, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd6b3845477d599647fabd28fab8c6d1d6577c634fa6bba736dbc46f1deebe3e6'),
-      (348, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '91655294c42170279784a272e8b1008eb180d3a86786c1e1c061f7998a95e295'),
-      (349, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b54157cf1b2eca63b0284ae5c95f8987551db3349111baf9d87c545a37b2bc2f'),
-      (349, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '2c7508021300a1ddac5af48eeb50d927e17a9498893ce5158f8f67159ae9f1fc'),
-      (349, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '383fa61f6b8a443dacb151784ef6aa2fe8a52670ee1b97b35ad923dc3b9e99ee'),
-      (350, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a6cadf911758bc5c50c58abd4cc7709082806b987831938865eeefdc24684a68'),
-      (350, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '5ca05c454491c2dbc5d3c34ae317e445838c37c6e7fa86ad261d1940a5709d5b'),
-      (350, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '8fdd07d5030cc7e1051310ed8cf45f5235c3b9e8e214bf7d6e0072faa2a3b153'),
-      (350, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (351, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '47cd8939cca458dbee0ccdd3551a0ef4ab4826207958138eed67d921d1c06dd8'),
-      (351, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '8698026159c894740c4afc64490ea07ea38791e9fd48eec7e452e4070158c9e0'),
-      (351, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '47cd8939cca458dbee0ccdd3551a0ef4ab4826207958138eed67d921d1c06dd8'),
-      (352, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '92ebcfed613d51252e62a6acd05f9d1bdb0baf0724631bc56164e829ea76bde0'),
-      (352, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b13283464f22bff7e8bc1f96fefdc837a8b79195d820a42b84244f046580c05f'),
-      (352, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'dcd3efeaa9ae364a2668fd01ae5daa57f38974a6739243919c03d55412ebfaf5'),
-      (353, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '550f0da2a0535d0b47c53ba88a0bb40c4fabf7cd9815c53b44eefb12f0fecaf7'),
-      (353, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '86e44ecab748ebd23cde177191f3c4c911230e383b761233cfb5d70f93083024'),
-      (353, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2a9980b130c9c2a36ccc14958e053facc13a8afe9a4e13db2eb5b7b61fa24975'),
-      (354, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a6a6aeb16ea00c031bb04e5388aa0398567c853bc809f03506369eabf4d77773'),
-      (354, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '9802776669d566c66342c8e76379e2e36b5476fdcd73163ef3c97343339e7d3e'),
-      (354, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '9c0095c04ef53d9df41602f3783c90ef3c3e27cc9d0b38262d23930db6313f5a'),
-      (355, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '149c6105a1d4bc77443237164dfb507225ae3263af75df6b3b4f224f1c84d919'),
-      (355, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd46cd682e41a223640809a6df075eb2fc0bae463158d4e77b88b10f2f87fce4d'),
-      (355, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '149c6105a1d4bc77443237164dfb507225ae3263af75df6b3b4f224f1c84d919'),
-      (356, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8226a8a80a9ae99eca06c5a1f2231b92ef36b0d030eddef379d4d6bffaafae4'),
-      (356, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f636e6f7bfc86e6ac87918e7e06f224a4b783c65f99f2be65f2e1da123bdd9de'),
-      (356, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '59a6853cb4f0c884f66816a2f49aa3f998e955b2677869b00cb136e3f4673d91'),
-      (357, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7479a263a0a29211ca0de79dfd5667bdfa9f02863830bc0c7fba899843d58973'),
-      (357, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '782b8be51ec80fae1671abf9d7528ba619d6f9b85135ca7f619217127af31418'),
-      (357, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9c382f4f3f6d4294f71795b8046229d82b7ae71c115c1c2f1b8fb4cc806966c2'),
-      (357, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (358, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a16154a50808a27db4b342b306f7328f295122163b77e02ebbd4270bf2d5ef16'),
-      (358, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd582e13bcbd41c89604056ae842f03328b6687f5860fcf920773fc131935fd22'),
-      (358, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'e86df0947bec81b6687c25fcd93406608c2c26a4b7caa6a29dceea83fdda2502'),
-      (359, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5e60220dd736951049206aef2fac93e789163cb35d3d664a4396353adcbe70ca'),
-      (359, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a77f7a876bc679bb9f2dbeeb08eed56ea64702ac525aa1296c815a1fef08588b'),
-      (359, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '5e60220dd736951049206aef2fac93e789163cb35d3d664a4396353adcbe70ca'),
-      (360, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '93710b35570582bf70b0a13ed5e0e98f10bd4e1ed8f10738f93a214417b4656a'),
-      (360, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '8e22d889899655270f6032fc8b38fb2d1d3bfb0b3bb55efd62fb2f74c9e66159'),
-      (360, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'dd82fe700601e66bcfd0fbdf43e8582980b9079303c24cfa4b4ef2925bfdffaa'),
-      (361, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '418522117ab3394f9606128d7de492b80a7416adc0af5b484b9a4dbe2f03e992'),
-      (361, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'df3dd3ee3162774bfa9ad9719a1be8eaf1c40611ce70df2028516e8ffcd543ea'),
-      (361, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '93156330ce0466e50174a27578bbd8efc92a5bdc6561fc0cc98d2b40e795bd9f'),
-      (362, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '44612b4b02372f3d32acda04000e115eeb0cb940a998e43b75a4bf8ced13bf50'),
-      (362, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '288c1f18ad8a01c1001ed4662901d5d9f66aa4d92ad2f236e3f10ccc61d8bf08'),
-      (362, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'aacf55d20494322e583bd0ac2403198663644c3fdf48497bac01db8cfb12864d'),
-      (363, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4f2d5335509a538b26d71f09d4f73e1dde785070de1a8d92359b299d37d4f9fb'),
-      (363, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '8a7e06aa3aa8a95deed3db7922a1b49ba60d7c750fa5ab6a0e31652d497cb315'),
-      (363, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4f2d5335509a538b26d71f09d4f73e1dde785070de1a8d92359b299d37d4f9fb'),
-      (364, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8fac8e2fb3f52c33481c3cdfc2cd622c39ee7426fdc28a39a63f0782cc57dc6b'),
-      (364, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cddd53f4361524c4af29475d871adb806f4836b10c4b16e3e3836745e476733d'),
-      (364, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'afbba9e8944b90053c608c27a2c693cfb7521c0e3dc0d130ede1c78c682bdd45'),
-      (364, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (365, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '11834eed5378d125c3f333d9f54aaeb095a515f49878c7acb7ffe6e9f800231e'),
-      (365, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '51edb219a5b81dc71f5e8de7b3f081d102718e1f4d673f1972a6e5bf5170ed68'),
-      (365, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '70104a4a9d9867b768dda0c41051e6fbbbe40df64da7a4d717d92a272623aca0'),
-      (366, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a60558a60767b88ca29291b746a2489b479415dfe93f680331e2c2fd2296357e'),
-      (366, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dbdfd7a4fbbdbf789e8ce51790266cd301ba004fe33898882e519030fade605b'),
-      (366, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '7e6f4df4aa049e9bcbcd9ba9ee7bce7a07208f9cb437bbb1e7f45163af84fc51'),
-      (367, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '658e2f3c98596f6ce633f48289a68ce5ab0ebe88eb967e69696515acc989e320'),
-      (367, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ea8ef79b1181b3acec86a4edcc66cdb23db7f00838436bc38fdb4963de9a7b60'),
-      (367, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '658e2f3c98596f6ce633f48289a68ce5ab0ebe88eb967e69696515acc989e320'),
-      (368, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f699fb6670a5ef15faabb9b4d01aaa0595237e1231ef0a127b2ae85824d39195'),
-      (368, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f9f96bf7f93b5a3d61c6560691deceda8638c74469b3be45223f75bf57b51c81'),
-      (368, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6b91f0ada11c4356c6fa49ddfb7682b365b1f5b9cbbdb525950e24fbc9663d93'),
-      (369, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '28a1625cb54f00255b5940d7ff7b13102616b19a74962336c460db4eef522d18'),
-      (369, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '61cfd1222b9e9be9355acf8378a989ad1e5af22358d653c13d5c505e1246c022'),
-      (369, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f300cd8482d842072ee3f5673c33568698aac93ea65b6ede6b7539b811d49698'),
-      (370, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '791cbbef61deda5d340f573e86f439e211cb47b6d03d060833fe08247db8840a'),
-      (370, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e291ad4eedbc5d2db6a5386aa65cd3fc4ffaaff35fb0db2ceb98e9c302c8e183'),
-      (370, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '98f5daa490f93db7d4c981ba5557d9ecf8a9ac312b0dfae1c533a84a773c918a'),
-      (371, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e6f6ff7b05628a4773d5ea453d7960667ee5f4565c74d971721e608948c5437c'),
-      (371, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '9fb1267c24c4aadf4035d51426d64a86ab9e5d3bd2990b98a500d358ba2695da'),
-      (371, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'e6f6ff7b05628a4773d5ea453d7960667ee5f4565c74d971721e608948c5437c'),
-      (371, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (372, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bdce771320dbe3b6650222fdd5b3f1b90663be7fcae970d0811d4bacaf4b1396'),
-      (372, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b5b0ebeac4bfc927a7f605e0bef3453f0780ad79066ecf327494153f90ca1350'),
-      (372, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5ad99f64b628fe03749d33169d67f660eb560ca804a186a921ff96c57d92e478'),
-      (373, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '83054e801c9cb6c86d61761899816936f138a9455042e0667d8b987db18b9f53'),
-      (373, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '7a04c25ee448dab52e0bbba034a6e12774cc4ad38d1015d8f4b4651f27a7fb51'),
-      (373, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0dbed9f80a158a735dfbfaf2aa16c092aeba7b033c56c07bc307412b898a1b7d'),
-      (374, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '013f087cc38bc95bd12205b7ba79d95942599930078845b0b33c27206b1c762e'),
-      (374, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '27b4880ee2955e679539c38fce9e4253c97c596f61ec036d56de93fbac60672a'),
-      (374, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'fc0b2fb82dfe0f3cacb3f0e4b40a5858c45694a7d844cdb27b7f3d974a21186a'),
-      (375, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2562ee0c0b009e2597b0cb8533358dab3d741fc80cda1330454badcba8fd3132'),
-      (375, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '81e560b6da8da88e320e357e4e70e82826403e1b7fcfa548fdbb56f86e653b07'),
-      (375, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '2562ee0c0b009e2597b0cb8533358dab3d741fc80cda1330454badcba8fd3132'),
-      (376, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5a0eb831cb5a028989a6a12d31d9c8a3c4b9652abd3e784555707d6b7ecb8c94'),
-      (376, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e8bcdac6b3554477d0ead7faf104ae4c46796e90c376fe8ae8bf9364f73cc819'),
-      (376, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '360f9cc64dd76bd7d528f1d7f529ae8e92eabf37a477b769e0574e73125fa78e'),
-      (377, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0b0b1054e903ce4ca8de8a64cd905fc6ad8bdac5ccc0bd41b504705dd440568d'),
-      (377, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e9ef87b96370ef69bcb454a746e00a0e3ea3ffb0c92a218f116a826d78fb3a56'),
-      (377, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3751555d5228ce41fc98443c01c9d211b26b1e9dc58febb70b97743b83e6e530'),
-      (378, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '981899896e2988eec1c3773ad515ecff567ce9144cd7e98f93245c502b156545'),
-      (378, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd2f23596b40be6673aa647197e6143bc28c59706e95e1af0a5d54791359da9f0'),
-      (378, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'd8d7102aa142c41d2e883e620b8f7d3551b1495dc39839ba571352ba27623b3d'),
-      (378, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (379, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7d5f6fa8f5013afcad0240a067722e5a9180f2522a0ebf8ca79e6808c64005c2'),
-      (379, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '4c33001be3c3d8ebe455d2f919de75fe1e6f969df9ea596ba732b8661360f2b0'),
-      (379, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7d5f6fa8f5013afcad0240a067722e5a9180f2522a0ebf8ca79e6808c64005c2'),
-      (380, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '97bc6b158f05f3a2c6d148fd70f358413dd998970137c001c887389d6bd3d5e0'),
-      (380, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c794beb4157f1064f0c7dc24439a964a0b4f237c9db36670d156b0495a85c8bd'),
-      (380, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ea86cfafc391b08571d583b5dd752c8808a83941d57df41b8149066ef560d542'),
-      (381, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'aa2b687dcae00e159595f7e5578a61b3f074f87fbc3537a3945ad3f753d9135d'),
-      (381, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '733a81bc27c9a5dea4d0f7c342ce9c5d9cbb7c73ab0eba717cc9970b5b3f8713'),
-      (381, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '930a35376d9abb72fb754454c4ad751ca0f23784f0bf906eb3ac3e577ee02fc6'),
-      (382, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '13670ad121a01ba564b2bd9b809adb5e49a1548f76ff460430b7ecc0c39e61d3'),
-      (382, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '3fb17716f6d30af69744baf7d25816c56cf23220617d84d30951766c2b94d74b'),
-      (382, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'f2ebc952875f63d5098dabee0d9e43f5fd30b77faa8a05d5c5dfbb3f5373643b'),
-      (383, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9a034a1b8b499dc82882b505439d8e561aee77351f9876969d4e15a0851cc243'),
-      (383, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '8ea2f06708ad9667a3390036f1d1d8f307ed72afa8c584f57bbdfeb42da9e7f8'),
-      (383, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9a034a1b8b499dc82882b505439d8e561aee77351f9876969d4e15a0851cc243'),
-      (384, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9996218f3fe2d938c82d212ac32e9ed1e6f83c567bb1c39dfc0be31846e5a374'),
-      (384, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd3adaaeb7fc7b192d038241ba3ead946245b3f639f1e99396ec9e8d34f9139a6'),
-      (384, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '799c257842a84533ed911fe04ba86b60cd9cb4881806736846e340cc69610b85'),
-      (385, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b66e90cd1716cf6a97d3ed09f7fd881066d32ce6988ac1d49ba6f706814b4e23'),
-      (385, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '76cf43e39b49092933b589702a7cca813f9e1d3b3cf552a3f11209f6beed0fc2'),
-      (385, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '986db0b419aa9f3186f9566a0117982144db65edb4b0d7034c54e4b26a4fb620'),
-      (385, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (386, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9191de24c8c1a7d0e474a6bc6610692d9241c5914c36c14897d4b514a22a9465'),
-      (386, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dde55926e0a77ddc9bf19251394e051723af3245889f9bb730afac6d577f1b43'),
-      (386, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'cd00e292c5970d3c5e2f0ffa5171e555bc46bfc4faddfb4a418b6840b86e79a3'),
-      (387, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dbcf7d8dc1560f1d26401988e589d8823e7a5d3be9f8dad1ababcc4c2a3aab05'),
-      (387, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '565ef8858eb74deb8f267802301027e150abe57d31baf38b42db925d6e0d3ed0'),
-      (387, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'dbcf7d8dc1560f1d26401988e589d8823e7a5d3be9f8dad1ababcc4c2a3aab05'),
-      (388, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b1e7713681882b038e798520485de2db189f1b16b896853bc3e432066c2cce54'),
-      (388, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '9bb51af84fa05f8b71a7156246b7510e12d7e6d391ba5f54216b29342db39559'),
-      (388, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'abd3e55cbb20ba034d192adff24fc1a6de04fb13894b3545ee37aa2e5a8a0b9e'),
-      (389, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fb74c3010c8a4c558e8b90ab5d6c95f33caebd581c0bf07943aa9ca5e2ed605f'),
-      (389, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '10d4df2c69ed2fca58d16226ad2854bfd48651994f543facf312a8762dc3aa53'),
-      (389, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3664604dff0490b57383a4c7a56ca7e3796e1d37124a485afc9f5aac59215fc1'),
-      (390, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8554a99f5cb8b9453888e862d533e9ac9c96def82bbba5caaa802a769483bf5'),
-      (390, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '04f178301dac1f2ce7e8a15940d4f472a25d1beb3ff2c757bbee688f8826b1f3'),
-      (390, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', '53641eb5798bbeb693a318fba1e14d7a60bbf237f2ca1dc32835a784f730989e'),
-      (391, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a022aaeca98d70a8d810a792685df48461d7c4e486cdec282e079a6aa9a4869a'),
-      (391, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e45c9c2172932453f2cdf22e6ccad321f3f8f730dd9eae9f39190c4d33d81474'),
-      (391, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'a022aaeca98d70a8d810a792685df48461d7c4e486cdec282e079a6aa9a4869a'),
-      (392, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b495380ebac5ae8e294846af6139c3ce792cd1f2c3ea2fad0abff74c9e9d4365'),
-      (392, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fc197731eb9458690255e925a2a470b5b6592f91e8f7214c16a84b035728280c'),
-      (392, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0d89183d116db29041053487320046e6e25a05f831ca2a62172d87e15a0bbd75'),
-      (392, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (393, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f66e185483586568c2515936047e9016dc5ff7e5fb60d4b9063ef6e899fe946e'),
-      (393, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '1595166059c832f89669e325eae8051cac20c428031530f051151126160d16b5'),
-      (393, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ef9bd6130a17ea73367ae54952e0279716e708fe62a2f57c175e92aacb2d3345'),
-      (394, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'badd60947c6ff9d134dfc70d88e037759ee3d97b3918963d3ba017c32f1425d1'),
-      (394, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '62b0420cece614e7e240584de5695772c085f0b8577b55e8460e945b27aa193e'),
-      (394, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'be469d3c1ec89e979608d85eabf4e36ad46cd3775cc0864394a7b7a2abb78e7d'),
-      (395, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd42e77dd2d224cfa42ee066c026959a7071d34d29b07ce0077e6cf47dcfc10dd'),
-      (395, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dd23977dbe3926470dd71e7b0d600f610759745cfd704017bbc7bfe11114777a'),
-      (395, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd42e77dd2d224cfa42ee066c026959a7071d34d29b07ce0077e6cf47dcfc10dd'),
-      (396, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd642020d3184a954d29e858ff6bae1f61e1a671cf0930d4a66bcfebd2398aa03'),
-      (396, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '0e7b13031b82e02c6f279a625e7665ae2f301ae456ba7f14de59e86db9a34173'),
-      (396, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c3ff9db5ae02a7e5e313789a593a7f520b59d28df0f44e4805bab35f9396ae67'),
-      (397, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b56c6ef6eeeeadc7b43c7050d95463c1e0a5ee14f1deb64ee1255bed470fb16f'),
-      (397, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '63fdf18b8c6ac977bdfcf413ccd290c82cd78961ddb1e4629f6405a43ee58d29'),
-      (397, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '17940c6682bed4c1cabc1adea9261c1f408f55dcde604b196e29f15abb7aaae2'),
-      (398, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '15ad8ad83efee7cb6be1c1f5a59e2d80622c4a3fe8adeec98fb1149451993ee6'),
-      (398, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '7b08c204b8a9de43da92c9e021dcadced8f035d87d0e35e84ead9396bc003059'),
-      (398, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '280cd897348c9100635bf79e7dbda96fac1641df479216a6eb059c52522860a3'),
-      (399, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1e922ad330705ac6a78a3642d7b85f101aa5392def364af0c649b8b0355ff14a'),
-      (399, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '019865ae9c7d4d51b5084a4598752861fad7095ac622d1791e9ec5fe3587745f'),
-      (399, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '1e922ad330705ac6a78a3642d7b85f101aa5392def364af0c649b8b0355ff14a'),
-      (399, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (400, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9dffd1ba197f795dc4747944b7c580e7d9b818e215d3d91a65da36fe26827b22'),
-      (400, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '956e96ea2e930877846307a02d3b4feb5338ef278db76c1314f79cb91b3009fe'),
-      (400, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '40bd7c388670b555066ebef488e4066bd3152f5dbf86e11a2d66e054143ca972'),
-      (401, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3fe79529f89136283ea744d224972ef279320db76826950265f91c5ac2b86023'),
-      (401, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '62cc106fe0ba3330ecb96b41cd6a5aaf80c0316d4cbcacfb0f919bb90386cd41'),
-      (401, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b0c2e59e2e64942b91d542a4eda33648ebb3ab7fd46a0c0f7747099b1f53c5fb'),
-      (402, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '93b6a18a780ecf976fae9ca832fcb0e5b8297604048302599e6d09b14b00c5da'),
-      (402, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '52ad721d6c3f2cc72c21aefd1d7db8a78727411c3375d5268f6ee15c3aa6d883'),
-      (402, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '48f63c0f55e0a3caa24087c6c4181aea2232c02bc7e92aae85fa8dd23a67c849'),
-      (403, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8eb8f4f7e5985f454060e83f0dcdd42ce9cc3da6543c6031b4cd08ae4d134bf8'),
-      (403, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c1c2d232655aa2a4b91da388cafa38dc7deb7fed52e1ef6157f567dfd9843382'),
-      (403, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '8eb8f4f7e5985f454060e83f0dcdd42ce9cc3da6543c6031b4cd08ae4d134bf8'),
-      (404, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2d2ea421796ea54e77baf3fbc8be46f729930a5d1df2e2c0fccfe1aa7909cebf'),
-      (404, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '4364910d9081eb6e6b2edb5ee694d5b335f8dfd9686d0b21a3be0fb2e1a20500'),
-      (404, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '05a54d729fa122249e5e12a0b5e46febe342ff03f5b46e41d46524b56aa8d1b3'),
-      (405, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '955263496ce561753470a514e1c5d9da96f203414bda8b6c383e6c37a2769607'),
-      (405, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd904efe95dcef1c73a059e3faf1996fcb824a46bfb39376eda6e571ff3e89013'),
-      (405, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '59b5cb401350520ff3cc92de450dddf8a0a80740f7ae8c48a2437bb30b2042ec'),
-      (406, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fc58cfafca9b6cd7922f2520585c0c8db84576da34aeea9bda3d78e4c717e54b'),
-      (406, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fee3b5d1337d71b8f0ef778d7cc44a939c6a399b08249c722e1108274fa4c61a'),
-      (406, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '78d689e87e8869a5632069c3cd93c988dc7908b3e661eeb6536497ec22d7f2c6'),
-      (406, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (407, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e867f781860bee19984f5350b817fcef3dd3dc7848ab3330e997df457d4455dc'),
-      (407, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '67998e173827005c9ab1a4787e250c7d6ea6cea6cf509f9fec355b09abe3f9be'),
-      (407, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'e867f781860bee19984f5350b817fcef3dd3dc7848ab3330e997df457d4455dc'),
-      (408, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd25e76487d3683ac1814c0a83f2827b050262426bf64633999f153c2865b5053'),
-      (408, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '36f4dc585c28bd23fdd0228e2694281d176838d03d820f53bfe8433743bd881c'),
-      (408, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '63286b8aad8a6bfdd0fd7913852fe205c5c1d38bd01ff258b5589b220aff4391'),
-      (409, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e6cd395d2958f2e1b6c21096d2746e4f44c3e0d7b5227524fb3c7ca55b2e314d'),
-      (409, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '5e0991081a9e373e2ff8b4a012d9443a076964f0dcc6d93c8cf905e985e11394'),
-      (409, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5a5f199d39b75f22eff872c00f1286314e1eb6f407069c39d16f175055c771fc'),
-      (410, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6ac275eb82cc612f1b4cf30505866905a3671308a5d25572c1635dc9244eb5a2'),
-      (410, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '3b21b7d90a0f480207e103fe247fb67bbec27ad6cd2eac25c7bc73bcc905ce52'),
-      (410, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '9ae41229c1fbbddfccd0f8bffcb4f50bbac3300a2fafda9e05d225a2a251f2eb'),
-      (411, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2e887118c07cd8cbf0d8ed631b4a1d5526c67e1b23420ef867db12588a9c88e4'),
-      (411, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b4f8b5d5874edfcefd558b0802548f9ba99bbccc993d7b36fe45ba30f6913ac0'),
-      (411, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '2e887118c07cd8cbf0d8ed631b4a1d5526c67e1b23420ef867db12588a9c88e4'),
-      (412, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a0eb3ae095e78fb3a6de21677be3eac82d0241aaee1d7225eba8d8466feba115'),
-      (412, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd41f5d15fc1244e5347155df2f7d7700d662281dd8e986a9ee9076cc988221b5'),
-      (412, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a9882199aa549f73dcafc6834b563c7edb2aa570d99b13217bfa2b087397f0de'),
-      (413, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '26af3bc4ef7f32e540e84d307cbaebcb59502a5246366404d32cf46f7a12952f'),
-      (413, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '6bef3570f978187a38b55ed711cddda84cbceaa5c1c0e69fdfb90959ae09ab84'),
-      (413, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6aa32599db2e0097b2cacd9a0dec279597f17342ba6d4d7c81a0768a2bdaa51a'),
-      (413, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (414, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a5526fce610a581f16c22b6e2171601b34ce5cb016f272432c4d7b65cba98427'),
-      (414, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ce3a652bd6625dd68bc8cd02e31ed93ea683478a5a66af33b6e917dd21ae4f26'),
-      (414, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '0eb7bcff71e76a92592d58a5911a446202667bea01e244fa0af59a2a1e1b1a9a'),
-      (415, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4c288b176db21a7754585ad27750a382f67a5653e40ed347e496dbc90cf256f4'),
-      (415, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '3a65b0d86bb5bb558a2243bf9634bac0efccd4a13edab75d67499ccfcbd37368'),
-      (415, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4c288b176db21a7754585ad27750a382f67a5653e40ed347e496dbc90cf256f4'),
-      (416, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '81e7e56aaea6befaee9619168a1f3036c5bc739ffd92a52fd32ccbeb90458a80'),
-      (416, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '58eae5a53888ba49aedd00bc7f319d09043532cbc4ec86b63b0d426ab4af38fb'),
-      (416, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2b005464cbd24a89a675989eb9b0f9349c034635454d35dc538f1875a3bc71d1'),
-      (417, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b6105a33232a474ddb2b2a9b05fd9ea6cdb5a5cbd3466970cf1db23bbee68fd9'),
-      (417, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f7984603a684cc3ff79116d0e4fa7b34384f5aca8486133df0630260f99f81c2'),
-      (417, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd9cdc2edb15bda68a3ae0af63c5f4c3ad7b90ca82a57656973d55d7f63a42bb6'),
-      (418, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6705a3b253281136a3c67da21f18c7a29a0d684519aa626006be534b9635acba'),
-      (418, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e331068a252f3c0d7800cf46c3ab6af41e6ab696b67af0dd4940b8b41eb000fc'),
-      (418, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'de1da8f3791deb5ea5a11c9a67179b1e240aa14979524a3cc28add0e3612c0fe'),
-      (419, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bbbd84b59f51feca553161d21c83cfc78f85e60031f1026719d21792bc85487a'),
-      (419, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '256c6d800df9b856675da49f02e7b557e0d56f12e4169c8af3881fa3a918a883'),
-      (419, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'bbbd84b59f51feca553161d21c83cfc78f85e60031f1026719d21792bc85487a'),
-      (420, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '82adebedf7ef86fa0956b46a8154d8e5d7813bc75c99ce523560aca43a92b65b'),
-      (420, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '1bcd3f3d154a3bc3b256fa409c0f86727ff598944295ffc4ea93561515c8626e'),
-      (420, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c143e14adde0bf6c8c3185491911b15f35b3cda4d2d450a0c75f15b2702927eb'),
-      (420, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (421, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bffbb4af14df9eb35a7ada61229733ced4930841d42459dbd6a48495d4f3e74d'),
-      (421, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '32e58ebe34aef28dd8c585f3a50c75fbe577f8ea1630dbe7705d87a349e43bab'),
-      (421, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd894c84a8ef4786e76a2bb25d9d76b9784d1e553a972529b3c56cb98b7dd4b92'),
-      (422, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f1b660fe5584881aa2dd1c9d7203013e8edd4ff6d7b9aa5b02b5ec9d0cbeabd7'),
-      (422, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '20934977751603f5edefb93d256cec1627e3af780206c1333b1bd331523b1ad0'),
-      (422, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', '61454e5365ee3c28c47392285a34b640464d1c7f3e3fdbc83a971c6cc659cc23'),
-      (423, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ff0b4bfe600e91d9c2609cb37fd1ef8dd7bf8062ab49bf6fb5e30491d9f9e713'),
-      (423, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fa748aa64086f4c0c598b2bbddee21f61ebd895b80ee733e2ad1c81245e4585f'),
-      (423, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'ff0b4bfe600e91d9c2609cb37fd1ef8dd7bf8062ab49bf6fb5e30491d9f9e713'),
-      (424, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8243e17598f5c86b92ab7b7cca29e02f93121fbe13deb07f8c1af74a7d82af1a'),
-      (424, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '445399adfa9dd199d8b570f2baaa09afe041ba7ab8d4717b8beda19e21cd8a80'),
-      (424, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'bb04a99f18bb89dc76dccc954f456bf078400176476f32ef7d6e351979f05338'),
-      (425, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5ba8cdd20d306475e6d9e3106a1c693c3e5e7b1858a8e31060b9c55264987a64'),
-      (425, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '6dc0d22efa814b6554057612a821e7363a5dbf3422666fa7adfc418892b0f4db'),
-      (425, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b0b496e0e0871ba482636d4c5d0b603b37a2957b15af49c2d145bc9f4489e28a'),
-      (426, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd674e142a813071d54b19e4d5a60b2a31097a0f6883d52d68b1e0e0bc3775edf'),
-      (426, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '0cc5f67437278121a0030332cf5e8c36793d9bf444758823d84e96c83860b084'),
-      (426, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'e8628ea74e839affd77f867e7a3198dc271d72723654afd3fbd5c6ca0f6e0b13'),
-      (427, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7373deb4edeaa93be766997ca74da5728eb2af7b460681c73f62bc738c13c66f'),
-      (427, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c1a574dfbf139b2cb4d8bd0d3be8f461a146bc57f612114caa4c87476b51cbb5'),
-      (427, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7373deb4edeaa93be766997ca74da5728eb2af7b460681c73f62bc738c13c66f'),
-      (427, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (428, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5d5fb2b4879f9b53fdf38099b8f898912b62863ccc0756606268a940083f9a0b'),
-      (428, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fc5c853e63dae1a73de047eac47e4163b39c1f126271861eb7658196a5f51ce4'),
-      (428, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ad424b9aeadfa5d8bcba9faf392e345623690e23db3d40e5d7383f60fc839f1c'),
-      (429, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '99dad6bb1db9afe24ff06146b5209a5adc795530848444084524c50199b442b4'),
-      (429, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '36f8258419e83e4f575588f6f3fbb6771f205414081a9f5fd9de588751972773'),
-      (429, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'bdfaaf0d39619b8f363d31f57f9f7b25b1e9d4f4bdda9c7df6fbe9a8f41ece2f'),
-      (430, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3aff9d08d8ad79c47905db28048184a24245e39ef92b93be3da3b04f4ed3bd24'),
-      (430, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '817c5f54cb554da58cc790ecb2b758359fed6e5a08a6366a8e6f4d1f1da99cad'),
-      (430, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'bc929cf50b67b257169e489f72ec6e9e912faaeaedc35f0eaa04f08bbdbb5e21'),
-      (431, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'afc531030e0d20b043ce4951ddc1b5246a40eee1a99dffa7d7069915d38c8b8e'),
-      (431, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e7e0967787e878e6ceeaa490ec07c0002a79c776bc8daf2187dd9e2b47826953'),
-      (431, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'afc531030e0d20b043ce4951ddc1b5246a40eee1a99dffa7d7069915d38c8b8e'),
-      (432, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0af5465d4d3279c18593ebcb5264a474b58619bfbf5bb973d932b9098d101171'),
-      (432, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c2d61e9dff7d9454b94e3d12cd90b17ae6cd72e9193c28562aa81d33c7ce149c'),
-      (432, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '27878e6e08e1b68bcddd9f0c15767282c294b23fc7735bb5a3d06935022188ad'),
-      (433, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '782c367b7366203f7949b3aed8b23fc1ae711e63fbdf17c8b11fab91d04deea6'),
-      (433, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd9f7bc595ead33c20396e43f6ca765f151acd715278740943c0c003029a6feb2'),
-      (433, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b151567acc00bd41adf8ecc553c1e881c5fb0aadbceee4e1e5cf0e94630fe180'),
-      (434, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '71c4c894d92de5a1b87eb8ab50bbb48fe54c398b7ba3a47397aa61478eb8f48a'),
-      (434, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '30acdcf31699231a3e95f43c89763784646b74daaaec1d1aaa0a81b6de82cc74'),
-      (434, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'b3bfafb816b71d075dd9a35bde48dab509b1eabf28184456e53b45a313f5e24e'),
-      (434, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (435, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7323eb8cad03d20e5821029ce58c068e949fcd2cd7606690302c0eeb38ac784f'),
-      (435, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '614f957fa4006f72cdf0665fa158b09834ceac03cdcb0220cbf857a411b1c1f8'),
-      (435, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7323eb8cad03d20e5821029ce58c068e949fcd2cd7606690302c0eeb38ac784f'),
-      (436, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4737b42e2fdf421b8b098a2e5952268875268f587523afce0147168610cbf1d9'),
-      (436, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '9b066ac44ab14c0fdf9ef2fc952da971a398535e1c7b8358d6188ca0cc14ade1'),
-      (436, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd39921462351eaa648a2fe2698f703a335f2c7d27a8ed239528b32fdc6632e80'),
-      (437, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2e99768bf3da3fcbdec21cb0d4b5041ca6400ee18ccf54b8ac5997274b9cd17f'),
-      (437, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd585e2ff275697a7fc64532ae5d51ee77647f07c4292176ee170c5d795bc783d'),
-      (437, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ae839b5e1791f38c11f8d85a0c93d595aff5551b5a4f434c7bf223d16330a393'),
-      (438, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1e4b4b2b9b9a075d0f75ca8427313c73ea987d892f366361dde0b453b0e1c1ee'),
-      (438, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '92a441fa389fd587c39c5a67d3210ba1a3668260bd62096c9c8468bf199f18d4'),
-      (438, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '749e934d2afca666c51b2f06e88094d057259931108fd9505c6e2f54f647b044'),
-      (439, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a0716e8f9b23256ef790d4cd73c964b1603e59067328d0b37f3318a50c12f38c'),
-      (439, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '590521adc92fc574427b912b3899e30903b8701ecadc736e87f1985268d36d1f'),
-      (439, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'a0716e8f9b23256ef790d4cd73c964b1603e59067328d0b37f3318a50c12f38c'),
-      (440, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ad803d8cbb524753f5d144dc23c9282e365ae15374ed604bc601a5fd8a72eac6'),
-      (440, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c79e869cb924a73e5bd6ab183cfce01930bb61f96273d7fd9d7c2e5aea3026b9'),
-      (440, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '878d9fb1e25b28db933504ecfab1451db6b2f60d45a5bd600fd84c21056b66be'),
-      (441, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f9e8be017e19a41671a5b4c248cffe854215339ee383ba5b9229ac8a46d3e641'),
-      (441, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ed329f8acebb7c6e73f02095173b04cf00bcd594074812e05a5f53ab22f9055c'),
-      (441, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b23e92e25c6a36c637efff621a7b9c859c3abcaa23ab8bcf34f382ee66854ad0'),
-      (441, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (442, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ad27cb8a1cb1a256df1e9694f9b40252613dc17b77feb15a7755c5fba5f7ef93'),
-      (442, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c7fa3c70d705a4118380a9dc3c0f1bc800c9bc01babc63559df6b4fe16739bb9'),
-      (442, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '617f2d8600397162eb9cada7f4f17756aae978b71ef1c5f1a8eb765126034277'),
-      (443, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1ba8d2e13b7eaf46509ed172a96092adef842d412e75ebaf2dc5a5743e4ffedf'),
-      (443, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '2e229dfb4764a362e8f45a6f1d81598b24d8a37140d7aef15a83ebbd7daea220'),
-      (443, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '1ba8d2e13b7eaf46509ed172a96092adef842d412e75ebaf2dc5a5743e4ffedf'),
-      (444, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f91e5eb270d39fdd04b94740ad4e9af5cec82310facc708bf471208fc2ace94d'),
-      (444, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c6c1424531a26ed0325788a482e1d30dc720d549fd859c0fdd607931cd39e7c3'),
-      (444, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '01bb4465fb5ce0911f06c9c3d0097631a6cdd5a1d795f91041a7281cfc876a10'),
-      (445, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a29eeb5e0ac086d1871f3ad3483959b84a2315aa7cca7388dd33dc5797a640b6'),
-      (445, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '34be5bcac9e768965b8124517900d9bfd8203d86a569a55d85f32e8438cb8f73'),
-      (445, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c2b52d8e36d4f1058cd2045143795788800277677fba7cc8e40c2c81b4d2f202'),
-      (446, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '64fe4d6f8487f8264dd683e8bcb88642c700feb6cc948864b228e448c8c9e93c'),
-      (446, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '9e4a754a24fdabe370142398ec2856eb3b4ec471815c2c40e415b2772fbd5bb1'),
-      (446, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'dd458d2f75ea9d444f9f10357cb11a17139830c5bf82c51aeb5f75f31e8225fa'),
-      (447, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '51756160269e16929d015092146db4909f6dd7e116ad75f46b9eb61ff2839819'),
-      (447, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dd64d9781eaa763e2173ec282b3327034750010412bc35dda9fd1ee63eba88da'),
-      (447, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '51756160269e16929d015092146db4909f6dd7e116ad75f46b9eb61ff2839819'),
-      (448, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b41bcb4a84cb81ff7e7fa9ef751a13a63c4ce1c62c54aa2e4d32276e1313cb0f'),
-      (448, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '399b82d5f070b5f716fac7fcb530eb3beca40098833f3a87c3f70dac0353b964'),
-      (448, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6c2327412fb6d81dc6fc601798255d2295bcf1c3c1ea289025347461ceacdc7c'),
-      (448, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (449, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fa420929bf37b50a7e62f494a3aa5840bc6a8f5d214bcf4f7737b0fcf9c3559b'),
-      (449, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c1bc73b4ddf46db6346b1df2f910f98423785b162438a852b8fde75ea93a3d99'),
-      (449, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '616b196547b53d60bf7ae8a3c8e5fca29156b79c3c21e1db13168b02bfc37f71'),
-      (450, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cd387ea1b2d32f750904e5f9b86ccc92911d6fcfcdcd24342ff5372945ba3ae0'),
-      (450, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '9487a7bbc1f7eea32f87427ab9f1a8965aad98d035191457aa793a4abd7e61b2'),
-      (450, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '31fa6ef34475b9083308dba22f7d7b587b769ed8021b4112f51e13e7a6c44fcb'),
-      (451, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '376e78a7696695383a02a8d5db1d36f6414b65d7afb482cb168341ea11f0c8d6'),
-      (451, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '63b8392d311d3977b5d4dd12ac238dba487f2d766c2d9164eb5f545ac778255c'),
-      (451, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '376e78a7696695383a02a8d5db1d36f6414b65d7afb482cb168341ea11f0c8d6'),
-      (452, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '38e334e9742f7fa4548054f55b51a6c8893610c061855adb789f66c1333596f1'),
-      (452, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '2f601b1f9e06cf0516747c13ac9824967b60831ec4ace50de05076065838c285'),
-      (452, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0b3bc0c53f6c78dbc556f4294da670c30fe6454dc8dd5d21f58fc59afc895593'),
-      (453, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '482bb6b6ca932c2ba096eed3b1e5c50fcea12ab5b9b7e4110f88814a547dff70'),
-      (453, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '01bb63765ee6cad0bde26a03e71dc7f996a820fe78db4a0bd364b9180ed3a1c6'),
-      (453, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '552f92fe3f8b1a97d9c8964bed497786256bb8303017c264d698d27848313022'),
-      (454, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5f2ca522cd192eeeeff98866287d47870dffb45843c85d331fe9abfefe650e56'),
-      (454, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '8b4c096b0d1257e34c2b01a2bb84b154548fe70ebfcf23442af50fcd8daf992b'),
-      (454, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'd4197fdd86089cca28cc3b3e5cc4e67628a8fc16e8808e03a13a4682c1ff0e6d'),
-      (455, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0b6e89c83733af87c7e84ee597a6fc4abb2b01db93c7b226b11b8ff4ee24c669'),
-      (455, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fc68c24551e7a8b111a724763b6f44aa884121a1818196137728d1ee6878db24'),
-      (455, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '0b6e89c83733af87c7e84ee597a6fc4abb2b01db93c7b226b11b8ff4ee24c669'),
-      (455, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (456, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '26aeb0db6371bd5d121f77a9ba28a1fb689aa15ed3b41c5b3429152a4f4ab3c5'),
-      (456, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '15a78b25d6f1b38ddd617ad901e9325409a3ca8290e549449f61d7571ee006e8'),
-      (456, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3868367c8c5bdb43974a282dc4a474cd07770b1c12e394b65b919f19ba3938eb'),
-      (457, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ddc6b5e68eed0e1344b508e7c9087b2b63064bc0b605c8f8adf7d13cd74bc01d'),
-      (457, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '0155fa70684e4de413aa7a9a84254601455411d65547ab1ee306c68aa6d7938d'),
-      (457, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'db067a8694e4fb4108e68b321e1f0fe641384f0f44005b9cb9ff95acb5d2f129'),
-      (458, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd5eebd6f9792187f59c83b53aa01376425b19e931aed8425ac4ab349ead82fef'),
-      (458, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd10776336159bbf4f7a96c351964466dc52a8fc7cbae09522541e3a4f4c7896e'),
-      (458, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'e5d6726ebfbce0223f61d3e2cd65bd16ff42c2153a7d15e121324a3a918dea5c'),
-      (459, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f3678558e7cc87ae1211ac303c6898523740293b5616ad98ba70a68100b88757'),
-      (459, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '193774d4ab19088cb29af361c958a1e7bf0ee72a3f054ae18bc086a391997f74'),
-      (459, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'f3678558e7cc87ae1211ac303c6898523740293b5616ad98ba70a68100b88757'),
-      (460, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '179114b5f566d80a01c3bd052ecff393cbe8f7db5bd11b73f6ac5f59acb873c4'),
-      (460, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '179ec32861c6278e6176968490f2753a63bd5bb3923a7fbd2458d75e631d6136'),
-      (460, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f00251b43fba9da27e20998853c76c0f113a671f3a62f5ac7a26edd3264ef153'),
-      (461, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3d036eb6a84b0695e1385bdca718be51dfb1fe8cc7b69f2534f5e22aa22de508'),
-      (461, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fab6f14cd431e0982a92b50952bb426815416f32676e1e8eafa6818fe224278a'),
-      (461, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3e5859d2c3772c3a3db25cc9560bdb973930253114ece50e0fa52fcbe0844171'),
-      (462, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd2a602c7ca1b400ac406f45f5f8efde74bde15cc8b55a91acb28ead57c72dd83'),
-      (462, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '37e092e1cf731deeee09d79d2ff154959d2d2173336fdb70bc58e148e9fb1f16'),
-      (462, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '875fd088c3e4fc6a48ec6d7f9b897956a5ab6a83b9710de550857731c1311fef'),
-      (462, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (463, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4836545be235a566def4eaef59ff6b4a758f9c345fdab4bb9dd57c63fc3a4db6'),
-      (463, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f8a60b30bf9e80531a0a94e1724e5f9c710393a48e5b1fcddcb735296b4f4959'),
-      (463, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4836545be235a566def4eaef59ff6b4a758f9c345fdab4bb9dd57c63fc3a4db6'),
-      (464, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8f12bc3fe09c466bc232fe09715779f434d909b4d74955143a125dd11a56e817'),
-      (464, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '126e3f7c1492077d97fe36a74b434f3724ebc809cac9e4dcaef5bfd9e8927491'),
-      (464, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a84441e28427a6e58817b60dc1f37810da8a15a2d60bce84bcdf440f12c956ec'),
-      (465, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd3a0dc206bf00c408319c0858f1c81e2e32166a8fc2534ff53862f7cb4289965'),
-      (465, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dcce256abb213eb06a9e9d22e8f7edd8e330411a1758a1cd1b281a81b4aea5c9'),
-      (465, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e0c2cbbcc6ba3fd6c00d889b5ae7e88ae26913fb1412e26d004e136b219af0d9'),
-      (466, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0c704890f17c574410b16e95023ac3d04a53a34ab96d6e42d97c7f9fadb88001'),
-      (466, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '3062fa666471153e780064e53abb5f46d7c2f8a84b529a2ff3a32b51e8ca1a84'),
-      (466, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'ffa73cbe6dea8b1e258eb587dcf161d21ad7ba52e8a2e77d568f0f031b7f64ea'),
-      (467, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'adf3228cfafd044ea01a3e2056f6cd1ab2e586b0b92a375d7d27ec51064c1327'),
-      (467, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'df2a79f59fd9ebd65a6838c35cf92748f1c80f867df9563fd68dd74935fa0b6d'),
-      (467, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'adf3228cfafd044ea01a3e2056f6cd1ab2e586b0b92a375d7d27ec51064c1327'),
-      (468, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'eb3e70b9b7095d28932404282f362daf28c1492729ae0e501f641c2ea95131cd'),
-      (468, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c12bd90203cb6469d7fbe29785176a9a173eae94440d0640a847e419139ab80f'),
-      (468, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'cc95c4f1b72542f45510fa56eec3048747a52110bb236d306a2d93d97ee67692'),
-      (469, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'debb32461ec4089fde7c10f98dc89b045661874a3295d648a04d3496967d1b96'),
-      (469, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e5019c738040ff4d65ad3112d975d8a704aa5ee2e7fb1f103b910b3c702aa5cb'),
-      (469, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5d9a4a218face82a8be884c6efd91f9174e3dbcea16cfde140b0a682c64a454d'),
-      (469, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (470, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '403dd6c6c8eb1e02a74033674374105d2bbecb2b724dfe1c739c6cd816a20518'),
-      (470, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'df181f882247a2a076325fbbb5639c7ad2fdb8ff9c85198ca8c28b62b70e4123'),
-      (470, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '4fa486120a534517af7e3beb33af821aa87ab167b1b371725b97237b55b581b9'),
-      (471, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '680094c713c9617cd01e00790d454dba0031afbc1dc68cfa26c5871fc57d3a3c'),
-      (471, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ef918f2358827f567bbc6d8038acd6b465f9b5cf6f049f48a413bb609764ba68'),
-      (471, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '680094c713c9617cd01e00790d454dba0031afbc1dc68cfa26c5871fc57d3a3c'),
-      (472, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3f84077294383580f72c770b59347f32911ac4c86428f05f710aa710d06f17cd'),
-      (472, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '7944e34af2fe6608e8f4194880bb97e231273c48fa0d5c3fdd04d567015576dc'),
-      (472, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c19160eb620771c7abc52cae7b3dde067cb1f46be11f35b41b081ea295ed9d39'),
-      (473, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '19b32ea24c04d58263df59f083493e27e9a890c52d3eca7cd8fb5be5135ba46b'),
-      (473, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '8e3b6f50013721547cd1cfa9f2d61ad15781536e320dce2a393a66377b285bed'),
-      (473, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'fbd5ede4dfd2e223fcb40f57d821e01445fda8b33868421bd4d218f4d8d4ab99'),
-      (474, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6c2d514ab60bd62e2118a5c29ad01909118e7a895efe6f6b907347e7845ef5c4'),
-      (474, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'eeffe559c89b4e213c279b8cd1b970a17894725c74752b1ac9f0b5ef8c3c2a6e'),
-      (474, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '7f5932bc4f5637df9878fc2d18b2679a22bdc4ee12198372c669bddfcf462a64'),
-      (475, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '83ffcfbd48374ab45bd0bac35f6adc1fa6f6f7b9f7de6b1e715190be9849449f'),
-      (475, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '6b0928bc76b1e6a0568c38e6e07a18645b938453431424e23f6f6302aa78fdc7'),
-      (475, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '83ffcfbd48374ab45bd0bac35f6adc1fa6f6f7b9f7de6b1e715190be9849449f'),
-      (476, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '512ad37a45393d9fa48d5f9c4275b9e1654a656c1e727b4e3d976f20fb9f8a1b'),
-      (476, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '774807b390d83a6da5833554a69ab78051d1f096c3963d3f08349a37d4d7c023'),
-      (476, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9ef8cce3a0fbbddb9aa4b39fa4c9c27c7ab0df7228dc13da404f003fcd8c6a3e'),
-      (476, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (477, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6996c3e29632d6215ea0e0385060da410ca8ce9c158ad21a90d318988b4d8c51'),
-      (477, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c59956e1d445de2fba4962fb887632f477357e48ed6183beb833781128eeddcb'),
-      (477, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f0c32860daacd70afbbcc412875d0e9cdd705a5feb38ac168012b04109815622'),
-      (478, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '580c5d4a9f43de39dd2b6ea7a48df094e4e38831604f87c27ae98e75c9d67917'),
-      (478, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e2a2d128f0b4a976d5240b68f76f31f855b86d422fd06013373d5ac88efa2a38'),
-      (478, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'd19ea9c49561e0d7b0cf5e78904e61293352084d70b107561251bc6b4674bb6b'),
-      (479, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6a5e1d26dbe16828788fb965d0f8d49ba14d2fa51b3a201f792b9c28a07de648'),
-      (479, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '705cb3fb72c458c2f0ff9e984b05b1295269db20319b65569795ac47b061b388'),
-      (479, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '6a5e1d26dbe16828788fb965d0f8d49ba14d2fa51b3a201f792b9c28a07de648'),
-      (480, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8b232af7c0031bb381fa57a76b0d796724e711aa8120a476b11285dc1a14471d'),
-      (480, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '83e9de66615f339b10c9e90b786bb201119d1f54480a56ac3b0f18ab5ea58b42'),
-      (480, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c5690ddb86e14a2297e88640f7f9b0fc0fe0bee348bf90706e32ffe5984611ee'),
-      (481, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '90f598e03db5579e9c9d25c5d56108286275f48af616df1adf96f4b1acdabb61'),
-      (481, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '6d02803a1d81027b2039a4ba85a297611b074e4db84fe312b3ef7ddfd5b723e4'),
-      (481, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c2b64ee7eb8868bf5bd83d378399d75aca3c0649693049e69ab1e920fa88e1af'),
-      (482, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9e3f927196cdd97a7464d6bc0ae50475b34c152f28e5dd15f11b4bc72a6cc0aa'),
-      (482, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ade78c0b0ddb7e373a1da55a9b3788f764f59d699e2a6e7e4cbaf9d796ddadc4'),
-      (482, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '7c47594709ff7b1bb6fe625e47ef4e5c5e4cebd165b1c4a7f9b8fb35be162b7f'),
-      (483, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4631a2c310fb7dba2c5476c7cb2929ed127f4f04afa6eda6d87e116b60c6ab4f'),
-      (483, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'da4dd103f73a3c1bbff3e478b88dd6c1be95f16ae5ccd0cd711e8c677c2ce7c9'),
-      (483, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4631a2c310fb7dba2c5476c7cb2929ed127f4f04afa6eda6d87e116b60c6ab4f'),
-      (483, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (484, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd455cd89f2ea5ab7283edc90b526935ee5129fd02c3e34d1575ad0dbc3681f60'),
-      (484, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a62d3b4d51427d54f9a1d5c753965e2d13ed2b6d8f8561deb8272fad30c1dbb5'),
-      (484, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '25bc58fca37ebb812006fd2ea355e98ca393cc12b8e925b7868cb5acac067c32'),
-      (485, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '49abfe0920ae4094f13490e6497c7cbec09195242520b24719a98ccda942fada'),
-      (485, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd46fb0977696c066a53fd3ead9441aee83ec274314ebcc17ffac6e8f98d39baa'),
-      (485, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '24a0dbebb6394fc99dd0d753f923290a1cd91438f1a95f31127ec4e6f03b8c60'),
-      (486, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd67945963ac4d10eb4ab8fb33eafc5d1674d1a135fa6be1a3e4d4ddbb0bd37fc'),
-      (486, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b363cd96217b808cfb396525e632ad801454492ef34fb54cf01551b38acba6e8'),
-      (486, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'd904e1f1e028ba9058a128a6fd724f0f9892ae8fe49c8f7dc2613183f7f8bbca'),
-      (487, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '803c7b7b5518682d544eca05ced8496b9bd82ed00ae7c0c804d5a9f637563304'),
-      (487, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '4af07731b1764e73e5bf808bd87827462c898220af57cc796e86e5b02733c742'),
-      (487, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '803c7b7b5518682d544eca05ced8496b9bd82ed00ae7c0c804d5a9f637563304'),
-      (488, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ac22797cd467b53e7b8158debc394e0133f72c48efb730cae8cacdd358716a74'),
-      (488, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e166ee1604d58239e86fb7cf8617e9295570a89cf52a93e0183d2250ef6a1d29'),
-      (488, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '99173ebb1fe2bb3720ec2a954837c50de584f9041a0980edda88371ba986886b'),
-      (489, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7d240df85e7e9936b2b6c484214020bf109260e05f0a2ca8ef4763b98b08e61d'),
-      (489, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '6a199113118209baf306a489409fc30c58818101a8dfe6426d80f0f5ab063409'),
-      (489, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e1fb9b4a357a38c2c771fdd4221b0bc21663581f65356c20455790e847b8c3d6'),
-      (490, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '92645f024e20ea75072a371afb927d38486a51a28159305aed7b7417b7a7ec7a'),
-      (490, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dc74065b0501102c4ae3da5092e31c3e0d7c8c448a52ebc6f220f8da0c1d3b80'),
-      (490, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '6b211dc77c7d9d1cbb90cbac69d44037a577f04d6b521f5a6f9b3508bc48b7f2'),
-      (490, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (491, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'adf802575c80b87b4352cf47620857346b73f522bb9ebbb7889dd8bc531c3767'),
-      (491, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '106b31f8360a262db688fee9b9b1f2443de1be36dba6b13366c2eca903e91875'),
-      (491, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'adf802575c80b87b4352cf47620857346b73f522bb9ebbb7889dd8bc531c3767'),
-      (492, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2ec4f875f5a74305c73460bffa524e3c74283f8eba016d6163a96494cde321ce'),
-      (492, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '96261d40e3945654e07717c31a7ef2e7e510a374ad4b7d087d09786af8676f85'),
-      (492, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '547ddd76ea222e621e376cdb4cf36a6aeaf23d4117fc2283e60b7ad6702457a9'),
-      (493, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a46e106b8102343bc83347c5b2580a16d3b95cc10b17a6c6ed0b4b74bf295f35'),
-      (493, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '1715c3cee9abbcd870491022c9161f01a4bb5a521e522a26e5491d5aa4f9f367'),
-      (493, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4b36923d6c23fa6ad7fc3d32eb32c8345f7b1861a6965bc7b6d7c5d7c15beb79'),
-      (494, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '178edaec24ebdd649d3ca9e67192f80f5a37ab39bb458a1043a06ed2a6e461d2'),
-      (494, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b19276ad5a98c26989798af180cd724def0057a66da8f540a4eb36a0e41ad4e5'),
-      (494, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '458e610b78a382db508ca7db1f0c0ba1360f5649ace4747a319174ac921cf1b8'),
-      (495, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2de73649d5d015032932e7759af8cdf4be574098123fee1b23dc6d6bf0c4f9a7'),
-      (495, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '705847d0fbc2666a81dc746f018d3c9d3da05bbe63d1b4948e5361113ed78b11'),
-      (495, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '2de73649d5d015032932e7759af8cdf4be574098123fee1b23dc6d6bf0c4f9a7'),
-      (496, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '35e3d04f9b029b14a4469e1bbeca924ca7b77f82c0b79b275dc2803ece820e6c'),
-      (496, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd583fa634f392870721ed99d6f77d0328c406240bae2da64c865a4f838329450'),
-      (496, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5c1c3987c72e819422531b4602bc90dffde4ed5e341b34ef97092591ebff8205'),
-      (497, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'edb74b675f8c0105a36152194d4b0037ee49ef122aecfa1c3b643f9a09251be9'),
-      (497, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ab1231f39eaa87c6cdbfc18e2b17217024f609d5f83b283dad1391317d76f1a7'),
-      (497, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7e9423b6fed7f8c9f24ff493fbb75e90b2f819ed71f3cf84ad8880b9c0281d87'),
-      (497, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (498, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1891be0775013652f6feb3e7115d577295711b1a20b3e41750a996b5c61e672e'),
-      (498, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '9b87df65571e06c61b5d20b5e79610e930af139674ab8bc7f17aefa4571d0636'),
-      (498, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '01c757d0b4e30e32c376a35aad54ae035f3796adf2a3887bce7bd36de5b9ddcb'),
-      (499, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9a2a7f79cbb4a3391409c7715931cfb88f6343638eae42e2242b4d6080a11c1e'),
-      (499, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '77719a47e5f8ad11087904196e52ba21dfd484417f904080c712ed4c25387869'),
-      (499, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9a2a7f79cbb4a3391409c7715931cfb88f6343638eae42e2242b4d6080a11c1e'),
-    ],
-    149174: [
-      (0, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a3fa94671ecf1d4892766c9072f7cd01401cbf55e8e46ce2cfb7180a10db934a'),
-      (0, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '5b439ed9c4e9c15e87bb74be996e3c30e944c91c6c3600f43e17c47bc6debb46'),
-      (0, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f64ea8f9c3b6ff8b4d72e73d087742e1f3be432e86bf19664f4e28e71877ff75'),
-      (0, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (1, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2fd1b4a0fe639d76d5ea105a0f910beab0d75e337d5749c4e7c47b90bc01d0b2'),
-      (1, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '4fb1f6960a9b5a85597a60f6d0774091c8cbc20a43d68a254b9b394d3c6b3cc6'),
-      (1, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9e6f2c407a5446453900d63c92f2d03351c9f519c541ca60afd884a2db7e0f6a'),
-      (2, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '28af62d5133981af7ec2b46802f8b2558990596b2a12a923c10050b290faace7'),
-      (2, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b954748b80c34b29479a7e91fbc69b477ebf050e2f08f25d5d5cf8e895cc2c31'),
-      (2, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'cd00e292c5970d3c5e2f0ffa5171e555bc46bfc4faddfb4a418b6840b86e79a3'),
-      (3, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0b7d49f12a093d1e67fe0e9e16ebc69f1e179abfaaa2d89671d68813324be057'),
-      (3, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '28e520ae9219e3fb264050ec496d3ccfb6e4496f9ba1720d9b9661ecd2f7c844'),
-      (3, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '0b7d49f12a093d1e67fe0e9e16ebc69f1e179abfaaa2d89671d68813324be057'),
-      (4, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2bb0932afdbed5a4791fca5d394f5a1a916b49444b13038c9956bc16d8a9a39c'),
-      (4, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '80b43383057472d51cbced611b900471da9d79a29078c12138d45eec4e8f7520'),
-      (4, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '301fafe42b1a66d4f7b7b3a72dc90c5d877ebfa5c6e2699e708723477981f309'),
-      (5, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '028b1d4baa3bb971cb43380170e6a8bdd7806c08a396efc96ef630bbefa4c724'),
-      (5, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '16baca4463eb6fca8d804681ba4bd7f660a6102e3bab15f748008660615d68ec'),
-      (5, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '58af3886c63eb03dbfac11ec3f8159e3e11e52e863d872db41b225c7a0d3ea19'),
-      (6, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5ee5447f1edfe18e60f2104db8ad806521cbd4452138d160c7d6592724696f66'),
-      (6, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '9a81d9a475fb5f40636835452266ad1112393cf6ae632fcfc60ca7ab1c7fc522'),
-      (6, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', '17de5fb66f861221f759500e65b03880a45eb00791f4cc94d8021c3f6161ba6d'),
-      (7, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b250ff8a7384bdca729cec8a5f23cb8f7dbb1b2414e26a92bb77db5ccd02684c'),
-      (7, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '7629937d48720d96ae8db463eca03dd426c6295ca30e6653e86f3d6c83806ded'),
-      (7, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b250ff8a7384bdca729cec8a5f23cb8f7dbb1b2414e26a92bb77db5ccd02684c'),
-      (7, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (8, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8b1e048d61af4399f331314e10ff9ed9a91bf8192a6a5cbd34a9144f56f30b2'),
-      (8, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '1d9278c8dd273adda005c80e7f10a60f53b9afe0851f31e56bbc2a9f4cc56763'),
-      (8, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '760db7cc521ebd55d55d1282095a40ce7efc9e36a2dc36d7d24dc12f4657864b'),
-      (9, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '382509d808046aa416cc02a843dffa29448df7427b2081ad5a54bd07dbab9457'),
-      (9, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '0d0fb8019dac6a4dfbce43c5b422a797674018960208a5b3c8ca6ee9c4dce407'),
-      (9, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a1f2db97133c0b40a28bdd7f8b50ea966b94bbaa8e60dc7b6ebea13fcf44a9ee'),
-      (10, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ab10541e0ddffaf3b9793cb569f4d12883e6ae398de87d243f829743af2b1065'),
-      (10, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '3e5d967aaef8efc87355c3a4ed1ce282438e5426ba1e696c56f063d586faf6d5'),
-      (10, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '89a14aa976d55c8331acac10674113deafa817db1b2ac3ae6337051b32096c10'),
-      (11, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7da68d56af53b3ef1f3e07a13bf3d96a61dbc70742612af3c17e44be3f0f9665'),
-      (11, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '148729f0c8dfa306d3fb7d4aa7effaa649f9e27358001868590b22d35bf41492'),
-      (11, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7da68d56af53b3ef1f3e07a13bf3d96a61dbc70742612af3c17e44be3f0f9665'),
-      (12, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '82fca7ed9fa53b5ae5a1a8ba96e88da9833a9ae6d5a6626c690a31710b489b3a'),
-      (12, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '505d42c51def6f10787cff8920ea04a7ff27893b65b45720a0f78d6971131686'),
-      (12, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '02db0c642088ddc8a046d987aae6ea4200256ab7ec3a3ca07435440e5f9e3c48'),
-      (13, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4a92c7f8b6da0145cae4c5928e882dd295fe0a6b3a39f5e917563b3b4a0f88fb'),
-      (13, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '9b24bc9874dabdf35baca253334ad96176264d4260a69b29afdbe6c408867944'),
-      (13, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e25c732b4242ae6b651d67dbfe3e5ad773af917f0774b8b7ba492079e1148bec'),
-      (14, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8796b0058bcb9ed58524b0913efda8bdc9e7efc4f7cfa79350e907d4529949c7'),
-      (14, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '6ad9641605d2a653cb0961128b8a6b20f01f7a03bcadc02f34da450e529ffb73'),
-      (14, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '9c630f353493e06d1dc22403ae59d250d96ac91850814df60029a5f679a6e4df'),
-      (14, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (15, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e18e872017781c003b491c0e8271751b93824cd3fb5236baf47b764a27b14d98'),
-      (15, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c2e784a7359933956d0336911adf2b102cbe1a5e47f9771825b47ae359e14199'),
-      (15, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'e18e872017781c003b491c0e8271751b93824cd3fb5236baf47b764a27b14d98'),
-      (16, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fd4631fa28b6eda9a624180558f4db60b3f1df8d0571953b4fe4e49671416da4'),
-      (16, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e0439eb1b05df34129483a74487a7837391894cff21d68d86bdb90bf4627bc87'),
-      (16, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '521109b142ccaac7b581e2f7e269b68229872c763b05714455ca3d6bd57c0f6e'),
-      (17, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd9426628f4ef3a689b1714b105a9b94456a4fea820fc1e2666fe37c99b0af6fe'),
-      (17, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '8fde18eccf7a1a5394d4db2e60c628222bb70edcb797d6d1c73f4634aaf8832e'),
-      (17, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e51e465e928dc9ab7e0abcc150549976420b5dc0f6c15e8a29191c369ae7c82d'),
-      (18, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '332c621486dec3b3bdcb2dbc376cdd9446d3a6009c068d84185fc2d2211f59fa'),
-      (18, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '6b2d160eebe2c6f2aa46387b945fc004b158a22742e38bccf1016e724f2b6bfd'),
-      (18, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'ecadc643c6a01df0ddc5cbc5548313634045bfd1ab21a99845146a4dffa2341b'),
-      (19, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7cd7c3ad023519399b57cc02e8d4752d961db2223b09a98af2ff3afdd01a933a'),
-      (19, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '1816d6caa82bd64684aaa6e1528644c630fbe045e7dfa4f9d1429d2c192cf967'),
-      (19, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7cd7c3ad023519399b57cc02e8d4752d961db2223b09a98af2ff3afdd01a933a'),
-      (20, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cf0e85371b034d76f66b29787dffe3dc5e6c6e01ce1253bbed145af1ebac4964'),
-      (20, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cb8e0ca612ed530f2872a4fa62c3392fd3f748f72c3cd7dcf069a2399e9fac09'),
-      (20, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '47855ed9169224a6b432a5a1b75b9d2d4e67b10f62551a4050b6ba36b2283ce3'),
-      (21, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a00de6f5b3c6d4db2d7ba4cfe03921473a108d42c1728e76d97aea24a00bc9a1'),
-      (21, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '32ef740d48470638720aec42880a7df8ff0288d2bf8cf72d7123d2e1b7bb1840'),
-      (21, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ab89ef5edd6aa47e11764f1ae8e164940b677baeee4c720481de856a58036c55'),
-      (21, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (22, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8d69fa8d649404eaeaf5401d560b81f478f211118f747b88b2f21a4beac21abf'),
-      (22, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '6060726a9b1e9c7626873f04842f4fb00a1fcb792e82ca73127cc7372e699540'),
-      (22, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'fa807c957eafe34b850cb453a096df2e5899f0902a837fccd59f9aafa869fb44'),
-      (23, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9ba23a0b74a5a4d2b708bd9656d7b99c46384867fe373c28f645300ddcb1e7aa'),
-      (23, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '282324dc8f527407567902ad7741ff540a7300bb910db1ba8b9b17d8750d3f00'),
-      (23, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9ba23a0b74a5a4d2b708bd9656d7b99c46384867fe373c28f645300ddcb1e7aa'),
-      (24, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '16a865d60825ffa6db87cbf65e996a4a259706f13caa878e9ae6c2d589a0d47c'),
-      (24, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '60aba18b4676fee9467732767e517f5942292f51c3b239476f9fdfd2d2d544a0'),
-      (24, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '044e949e176b81daeb857c0a6cd0061aec7378f3ea3c3e5b7db8161db4a6885c'),
-      (25, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'caea973302c16bb7b14784f525c4c2dab3fa0de7b172b7e143e0dc537d2a5beb'),
-      (25, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '27ef03b1df702e8eba4607603680cbd2184aafdc796a419ed908e90cbb666a5d'),
-      (25, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '678fc945104cb239cd6e27af8c79f3a310845e3ac0ecd772d49351661b1e3acb'),
-      (26, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '335520862f6c8c92db7ca427450aebd22f523d364f7745913ce8e4ac6336d770'),
-      (26, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '6df4268f298962cddb7845e01ab675b5645d749e2edb8c521babc7ec82a64c51'),
-      (26, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '7203fb8598101915cbecd0848ac0b37a76f3b651a2b51e0c9921cce07d23cda0'),
-      (27, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dc6a893d463be6ae7e567eef783037faada79d010367a1ff86d9f4efcf4beff4'),
-      (27, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e131c0e7561a9c767148eea6525dd1819916269614ca9630de2cc2185d22966b'),
-      (27, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'dc6a893d463be6ae7e567eef783037faada79d010367a1ff86d9f4efcf4beff4'),
-      (28, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ff4f38a53d54d0a9a375b435cb870acfcfcf18b4d9b10d157dab6c73084ee0bf'),
-      (28, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fc9b0e9ceae502ebf262e82fb6853bd471e9e07986d4009c9134461caa82be07'),
-      (28, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'aa7054fa9d291183bf84b3a731491f87f158833a982635c7e8a18c76cdf9a178'),
-      (28, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (29, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '12698f2fd969a2833b59f8e7bcbe65a55b2bfa7bbf2051002b17ae513f7043d3'),
-      (29, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '8e6d35a1251f940519f5a54abfb3519c49fdbd14352ccc4004829b3b3e605815'),
-      (29, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a8d4bb5dac1eda077210b5bee7207864a89d76ac5b5f118d47d270bf084a479b'),
-      (30, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f85338a479f2d8ee203850471a8a9e6bb8111bc2164e190b6c31a104bb05163d'),
-      (30, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c49f8367c3e97185c55bfcf6422ee16db95e1dc9b38027645b18f594efe166d6'),
-      (30, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '21440d733d041493d30a2feae07f44ce6cfd2f544e16a19beab03d6248c705bc'),
-      (31, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3d9bca9b5d749ab97ca4711aec57357a8c3ede0f3574918c34a6bf19d8cb88a4'),
-      (31, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '8d16f81e4c31e2a684db46424df413f9d798b2a79d2921f956f23974d1037dde'),
-      (31, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '3d9bca9b5d749ab97ca4711aec57357a8c3ede0f3574918c34a6bf19d8cb88a4'),
-      (32, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0d74bf475225200c7fda8d196320abe85f70e2b3d8e998c583bd0045bd454b86'),
-      (32, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '5a368a8c3e757f0d557464ffc811831c4fec4872c5f949c775c0bbef4600464c'),
-      (32, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1c473d796d85b2c4f499a8309ff38d0c2ba47344db1e66472fc2d05a26685bf8'),
-      (33, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9258cfa97f82db1a872d057b031b292b02095e2ef6f42505a4b4f0a3cd5b530c'),
-      (33, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '79cef904c860aef24ec0fe7717107b7b6717b442a38a19d9331738a36109dbf8'),
-      (33, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '71a1355367c106274bfa20adaa22df31a0dbaf686a5fe4c6470641958e825532'),
-      (34, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '22b293a346d30d940cdfd5229e9d9c24f4c324921e34758dcf2d135ce9b27b95'),
-      (34, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '644f32a2f28eb98a00a108a6a7cfd59330cfd37f96823d98f089cf86a2e83999'),
-      (34, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'de1da8f3791deb5ea5a11c9a67179b1e240aa14979524a3cc28add0e3612c0fe'),
-      (35, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '016248be8685b0616ebd162400133374266ecba10a5b7c45addbde521ab11721'),
-      (35, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a757b4565fe88b0f9db0a86ebd2cdd3b46cc29fda7b41998c321d1fe37adab09'),
-      (35, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '016248be8685b0616ebd162400133374266ecba10a5b7c45addbde521ab11721'),
-      (35, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (36, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '74f37524ce50aa801c47b80c61d80e5887cfebe807db10b083fb361a424285fa'),
-      (36, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '4ff9094f5f61c446ce631616325b74f3f6cf3c3a7cab4bd33ee5008dc8cfc38b'),
-      (36, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '60d18ab6e7182b789f69dad23363ac414665a6c5382712e421cab17f407e4fec'),
-      (37, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8a249346d10427133ca02abeb69530d04202a9367e347ce99f765dbbc62b9227'),
-      (37, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '578763a2ddf7b3767fc3a1246a257cbb9bfae83a08063ac5ad51f5d1aa901e96'),
-      (37, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ba6912037458991ff289fa1cde25d16d8640bddc41dce03dcb71447b57e7c1c7'),
-      (38, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '32a920d7fdc753210088c5eb9cd600cc34afea8c7d8fa48830e9376f75974f33'),
-      (38, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ecee444a2751ef46790d67b2d40c94282398e27993db022d1c58a68237d17675'),
-      (38, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'bfcd467ade68caf16dd7980d632aa24fe42168609aed073a72526a6c3cc0fa3a'),
-      (39, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '36f51ebb07d5049ce92a313961c50e36306e261abaf6abab47264f5538d3fb6c'),
-      (39, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '729adc3139c8cae66aaf969b3c0df7fda992e18451c41fee1b296f72bb3e2510'),
-      (39, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '36f51ebb07d5049ce92a313961c50e36306e261abaf6abab47264f5538d3fb6c'),
-      (40, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '486e161868969b7720aad0b045c33ba26e8a57eb28fb81d38944d575dd65e775'),
-      (40, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '70526ce44ceed62317ba8e3b71a9f73f6af3055504b56a4dd505f37081c73915'),
-      (40, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '279b6e5f4a29adbe3c8775f3b316119c882331b6bcca64f69a9562ff756c4979'),
-      (41, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a569b51ea23cf85501e3b039ec0b3e16081bd9a7e66c22fccc09b24c7017576d'),
-      (41, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '949e524005c96d5c61bdf7c0642bb70a67de9bef4aa69e327a9b864f21b4190d'),
-      (41, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2a9427d054b0473673194a328d63ddaf3be167f4c0ef7409d8c30ea90d287690'),
-      (42, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cf19aa624b2a5ef1ad94742c94ef6b3baf8ccc36a1e8a3b645f9c012c5a0418b'),
-      (42, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b106def6ebb9108efbbc5dd62fe140046fa08eda6c2979248c247ed3458e1cbe'),
-      (42, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '33af8be68257728c6fa8ab5873afaf7d20ee22823630f476494ab7a8446a08e4'),
-      (42, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (43, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4de03c996d4c0f8c116e101b5c8c74b7b092bc7447396de2f5b59bfc75a2b6aa'),
-      (43, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '85db8353030227cda7932c644eff285a7cda6c2bab13f3a66b96d994b2ef13b1'),
-      (43, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4de03c996d4c0f8c116e101b5c8c74b7b092bc7447396de2f5b59bfc75a2b6aa'),
-      (44, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '262c8612ce6685209791943f9b89dcfbf152b6ebb6ae84b5813260dbd4ef5cde'),
-      (44, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c517353f72fc4a473f008dc4a09f0d9d3844a06a4926cd367117e132edf7b2e3'),
-      (44, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2ecfda0a38af4bc6d7cee0cf4140555bf02b495dc6124533f8df08e1413af27f'),
-      (45, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'adc2d586132b90d5927444bde0bfdf508bf55f0e58e5ef09926eb0fe47c888c0'),
-      (45, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '254757b921eae624aad462558c45eeeb231f706c36c9cafb0f3b9f00f8708188'),
-      (45, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5c8d4385de853da6d0849aaf9c0548ce930fae08b6f9046901af0196bd355ff6'),
-      (46, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0f19f8227626d5c6ad0980a2469bdb181996478d9ce885ff1acfbdd895e0c9f6'),
-      (46, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a542d95de4e5d50194173d379449dfc79d93ccf64b06f04319477f75405d64de'),
-      (46, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '1b05b094184b250873b5ca507d777253566539e665fb2dd806805e43a40f9386'),
-      (47, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b3314792fcd776a7d9d7295ed6cac8cec6cb90e0ff6948e1e009e3ff4a5bc811'),
-      (47, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '89b1002a5f47566b701c4a1073b5cd4e006af4b50fd346e221bb26dff74f6f77'),
-      (47, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b3314792fcd776a7d9d7295ed6cac8cec6cb90e0ff6948e1e009e3ff4a5bc811'),
-      (48, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '26243b3d543b3e1dc98db575dec057d53089b5a00ca135858d42d59d7dd3c255'),
-      (48, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '15bf4e69db09142a451ca208a511e493018833319e6f0f4667c0704019be4e54'),
-      (48, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'af49cd302c4b05e3e368549ac948fcb454683f69c32e147c3734b0d448d5d84f'),
-      (49, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7fb46328061e9863a54dd900a35862f6e027678ba9aeb079bffd53f23561d040'),
-      (49, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '291e42f6c6686cce3255eab1c98f17ab90b68968bebd56cd2fa934676ab67567'),
-      (49, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '59a4b31cfcb8d2fa5a50b2f8241dbd3f950ca46190d939b59ccc12e5a3ff705e'),
-      (49, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (50, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '146ac8a5fd24a257dc1890b1b04a3bc186945283115418e754ee7cf576207447'),
-      (50, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f84a9ca1529a1fe91dcb18dc3ba463e86addadbe59870360083119c9c698db81'),
-      (50, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'ae0d2b9a6cf82254c861130937151ad3c28abf8e0d7d6a1673e76a5d93647e52'),
-      (51, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1de26423461f625890f7166b6bd0ae29d9b35958601f6001b7b03f4e2f545189'),
-      (51, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e5f1ab6a45dd0f9dca3acfcfbc8407f32e93667efb5114d4793f137d09fbbada'),
-      (51, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '1de26423461f625890f7166b6bd0ae29d9b35958601f6001b7b03f4e2f545189'),
-      (52, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2aecc580fd0f5027c29aa1b9de75ff567aa3b514435e0948ed8e63640d0869bb'),
-      (52, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '83953612b90109ac3fc801849538dd93f8d73b4f1dbefdb3e908e0d89a7a56a8'),
-      (52, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e2852d52d66e870d95691da51a3bfd299fa9e2d4a54d8cf992bfaf92d5b76b5d'),
-      (53, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '13892084121fa9c3ce5c83aab31360ceeeba812b8573f7ec24eba0355b05262c'),
-      (53, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '08c4ab396853bdfd96c587bbedf6fe09bd083dacdf86e72f4fa870493c5144e0'),
-      (53, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '65afe0d84a0aa6945492fb485f5876b464bff3f58eb7785c128ccde9e745fc57'),
-      (54, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '17eabba36b6a443c9ced218e7ad239951085589467bab4394df26c4df8391bf2'),
-      (54, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '36833be227eb184e4af958da97154e3056cb5526464300b0882ea681cb244442'),
-      (54, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '38f6343f1d5db257ec32cdbee5a557b7047dd049e1e3c45ec16cec01633cc1b2'),
-      (55, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '77ca22c1e0f1b027c013bf2baebbf080c1ac535913ffc27d17f1594d3e58307a'),
-      (55, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '948472b6d96049a0263e49620eeb438ac30ad3f933595b7436b07a26b87acfe9'),
-      (55, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '77ca22c1e0f1b027c013bf2baebbf080c1ac535913ffc27d17f1594d3e58307a'),
-      (56, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4c527d06fe5024a1fdae02a070d9198ec6ba2b646cb8c28b0ccc6e8942af976e'),
-      (56, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ef36f9627926865ba749fe2240646eb4d164bb037c3b6827a85c85c9cb42d179'),
-      (56, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3eebf8c2902dbe142cca9920144a6da42ff979af9e7ff08ee9eb700ab127785c'),
-      (56, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (57, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '41ee81d619594d2646e9f88b9d90f17e26ba203ec454ed2ad322aa7664b18c5f'),
-      (57, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '6d2208e0fe54f5408a96d7ed9339d2cc7e7abac5b40725176ef8987862807f43'),
-      (57, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '95f5fb2771cebe71277e09bdf14b14b51351fe504c85e6b76d43456ecc2ee831'),
-      (58, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f33da9326cc765465f9f4bf811c4801f7dee2beef32fd538fa296c28b7e41b18'),
-      (58, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '27e002f23b84a7ab91b68d475857484c2d768cf89ec3bc04d92b865b323677a0'),
-      (58, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'd7f7971c4d52f2d643545daf4702c814b2d5839e651aa2589f5f798700f9aa66'),
-      (59, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '459cf7c2c66cad135691ac85d106e93525fb87cbd476d251737c6b966b1fc6c0'),
-      (59, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b67a5659beecd27706143a6161278e9b674b1a287e41a44886224bc45878b7b4'),
-      (59, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '459cf7c2c66cad135691ac85d106e93525fb87cbd476d251737c6b966b1fc6c0'),
-      (60, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a27e4bb5c58f98b8915263425fd6297613dca78e43c519bfbf7f7a40ec2ae008'),
-      (60, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b3b8ae3022ed4e95bc569abf2007d70b2322eb1064be15adbee82e556ae3ecb6'),
-      (60, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b1e609231ce5181477c7c7fd500dff6eccb714cc77a931fcdee06702555f63da'),
-      (61, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0872b07a4a69eba3cbdb73bf86416a07f2833f0775f8e14c0d86ac1530d57670'),
-      (61, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd5f3d3b0f78a09e5358b5f113a6fa7b694dad8973da874f957a01d2ceba77319'),
-      (61, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '83b152ab44e6dfd7f1bbf3a7a40be9b438ed40dbca74032d9656290e3eda89b6'),
-      (62, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '468cb2212ed3806b26ba51a64c1b7a937ea2cf9ea39ae93babc8aa10971cba4a'),
-      (62, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '97315ed7fcba999b5416aa587150180ae6d53ff73fe2b0db029f1288abe4f182'),
-      (62, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'cef5fecf2618a3bfdb49b7edd748eab56e8a72ab794661e1b6140fa58536d14e'),
-      (63, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4579ab12560ea7a24212de011acf627e68cd5c91034fd4ec6aad9ea6a6e070df'),
-      (63, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '028a40186ed56a89e45431421d20592755215d7b8558c36df3a2037d6c50fb7d'),
-      (63, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4579ab12560ea7a24212de011acf627e68cd5c91034fd4ec6aad9ea6a6e070df'),
-      (63, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (64, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '769855bda1cd79ff09c32fb8d873beef2fac82ff45fdf4d5de632e49fd8efadd'),
-      (64, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b5a180477284e95cdc94be026fee875c2e84807de8665901f90fd7d7ba57961f'),
-      (64, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'cb0bec4678d167fc4e439cc4720ad570deeeb411b7058d42900cfb8ddc73e65c'),
-      (65, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dfdf860f41fe55d14fdbf1ec8ffe67a2a4f54c935b990553b65c6ea30b5fa8da'),
-      (65, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '1688cb22aba8e4530e1a33e1224cc7c1d5e2166efc0b053576f451623193300e'),
-      (65, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b8f3ff0f879c3b9105a8bed337a28341949461da6cf707bd7c3f6fc160aa4651'),
-      (66, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5e7b7db06649335fc0f95bebf75f8ef47ccdd104805a0e92b7c07197883b1c97'),
-      (66, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '4fdf29b1ffda0d6f9296820bb86a51a1a5cfc353342367bbc4eb35137b94d7fd'),
-      (66, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '9c0095c04ef53d9df41602f3783c90ef3c3e27cc9d0b38262d23930db6313f5a'),
-      (67, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '53e00cc03eb6d71f0a7186e0fe4638bf1b0207cca252140940a0c0c83133c9fa'),
-      (67, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '72281f33aae2ba7df86342fd9a0ebbc3d0ccdd3df310c768971e837e2a9639dd'),
-      (67, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '53e00cc03eb6d71f0a7186e0fe4638bf1b0207cca252140940a0c0c83133c9fa'),
-      (68, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '337a9c6477153b91b3bbae815771b7f3e2555b213abaf9d65592d4b33726c373'),
-      (68, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '431f8b6c995492a7b3e9e27757d6b45e80c4657ae2e0fde9e07685b1a5fc97fe'),
-      (68, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '03dc156803e3e218dafff05ad7b2da2befcd1c58da212c1f8a99e0eada19256f'),
-      (69, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bd711a90382bf36dd6ec15e8c5b0c786149f3ad4dd8ef0f1353007d7d8ef57d5'),
-      (69, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd0a9d1a6dc0421cca6c0f180c38f35a890118c6c2d3aa9ac31fe459dcc92d94c'),
-      (69, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1698d1f12f77787b32a9481ae227956d2e55ab34c980dad720f7cd359496c35c'),
-      (70, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '43800db36927927a142e4bfedd4a361bcf31ab299cc7496b31cb93f0dc1a0fff'),
-      (70, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '04e8360efb7f1d542d4b5e86b73aad6b590c3704fc6f19857800f927ab85f275'),
-      (70, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'c2d5716e36ce6629c6e54b86ad5ea0993a1f09e9614f48f86f621993e3dcafe8'),
-      (70, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (71, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b5c60b85a9d6abd3b7bb582a73bcfa507d460c6ca8f1903bb4af8eb31ad2b10b'),
-      (71, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '50ca4b50367c7ae00a823e6fe26a410daa0b349dbe7f034fef85a2888448f62b'),
-      (71, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b5c60b85a9d6abd3b7bb582a73bcfa507d460c6ca8f1903bb4af8eb31ad2b10b'),
-      (72, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e0b6654da903f7f0a4ec53e7024cf31845426e9f4d876e43688c54e57704d143'),
-      (72, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '52e7b2a41519abb9d2b3017cd35d4d696880c661896bbc02a4e506cceb998ef0'),
-      (72, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '703e035ac4c9830e43e004211c25a19252736ce590ba730da7f139d4f66463b3'),
-      (73, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f944dc7898bd41896fb62d1a3c677ba0e2cafa943997f969061a6611032b8678'),
-      (73, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '6e1152b84321a4e194f6789bcd2c6d857d24427c656e428c9f069785d8dffa04'),
-      (73, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd14c15b7c6f849df301455216c24122a8cf44058a4bfa08ca346c531c04937a2'),
-      (74, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1327329f91efa9b96533eec7b89bd81d7a384938a697cc04cdd314af883026f5'),
-      (74, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '1c1bd8078f86b6020869121f3ec2f33a34e4c6dbbef496859767e75e91c77ea5'),
-      (74, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'de42091bce7018e15c48adae21d3da8c6d7be8b7ed05514b4cc736eb89d1339c'),
-      (75, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd6665e6d294d7b11053cc38f0e0c14b88a1ed80c37acee3944668379f869e4e6'),
-      (75, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '410c307709840c5b2c0177bc8cd538387d1a045b2fafa6f5b1ca886ee7b23458'),
-      (75, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd6665e6d294d7b11053cc38f0e0c14b88a1ed80c37acee3944668379f869e4e6'),
-      (76, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '037d59e7ad7d5c44d5c79c95c97c8e90b3c241ecf096590d5e7df9be78dab427'),
-      (76, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b2cfc5722b696b97fe8207c77aad175cc55a55c1e55653412d3667cfb281ac46'),
-      (76, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '730df7d3af45a01facd422329a72ef1bb72eee1362c414363ff5352cdd9ba69e'),
-      (77, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '30de9dd6c0d962280c17e6fd64270a240f0de03b99b391d6f96f6c6deb3ddc1a'),
-      (77, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '72aa5562fb35b420e8f31ef32680e9959ada8d765bf3d3cb7ffde94769c0d7b2'),
-      (77, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ea86a35f3aa03a321112efb655880c544a548a3ba0b25e76841d8fef0740beee'),
-      (77, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (78, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '206797f9f3989430c16de41e33c401417fc450939df5144f51d228e120efcc30'),
-      (78, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '42ad75062b4a125e12068866abfc4474dd38c65f5215f9c7f1de2628f48798f0'),
-      (78, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '875fd088c3e4fc6a48ec6d7f9b897956a5ab6a83b9710de550857731c1311fef'),
-      (79, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '406271ca00caf24b4291be043090cf488a223603b317bbe6c5de2f8f56903f1d'),
-      (79, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '7df900b8f93f6ea1216aed3aa16f76c152c1e3bd1ea71896672bda8a59e5ce4e'),
-      (79, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '406271ca00caf24b4291be043090cf488a223603b317bbe6c5de2f8f56903f1d'),
-      (80, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8ebda9e7b071e7d22a7f29ba0bddd7be40c620d375410c872ee232d5c3fa7cd0'),
-      (80, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '37cbdb79cc9ff183e612bd2cadbd08b16cc0db523a4ba616763506ed207a9008'),
-      (80, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '66341cad8a9439bcad82e5a7cda18f23d3f7d7c2c2886e0c8bb10ceda1078525'),
-      (81, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '275ee466e2127975d7636b48bbd9df1cd4c6980601f5d34a3dd55942def46ae8'),
-      (81, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c05487eeddfef8792a3e4dae81df9272d19e46e9dbabb73d9b7e7ee2e84e3da6'),
-      (81, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '29b0d1643c459e7f3d14960c30d576badbe404da8d0737fabf43f3ce91af6007'),
-      (82, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '30af75ad2e7c541880afc2fa717e15f7c9dcd0f45f387c4bc3def1b8251065ff'),
-      (82, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '8c4548767a17dfdc7fcaaf9ebc7d954ed99f227c5fa76d2e853fe65523858634'),
-      (82, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'ad11f7cd3b8196765b0b7083b5eed9cb8955f503eec2d4a1b02adad2d43f5ddf'),
-      (83, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd6213bebd90807c4dc07c26304dbf38b108b87c14ac6276fa538bb814bb16dcb'),
-      (83, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '27cca38bb2d369be0593d5602064633e19f081c5005a50e388661975a25c03be'),
-      (83, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd6213bebd90807c4dc07c26304dbf38b108b87c14ac6276fa538bb814bb16dcb'),
-      (84, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '454d228ad2decb2a85fb20088b5bf4beb970151df8441c20b15cd830bad2671f'),
-      (84, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '05cfa623870146344ed874e8453ea9dd3509d7deb2d0b79a417e25617c4fda80'),
-      (84, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '79835d4bdc2a31ef482189a40ac4a071a6e05b3e083de772dde7891c3ca4aa6c'),
-      (84, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (85, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '339bd189f1af48360449d3eea66cd9b8cf8f5297bda6e9a9e07cb68d2fbb1558'),
-      (85, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c66ffdc37a33af92872a8ae4bab6afe80cf5bad63e81db586973ef6ee8064f1a'),
-      (85, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b64257230f974cb0ed6352c4436d5d2f2aa1718e038c80133179cb7a05c192b8'),
-      (86, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '590ae5bf42b0448c2c2c4c9c7ceb1e560a0417d3733cf7e7cd690b3269d1e954'),
-      (86, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bc8ad6d078e9bec909e213820c743184a778b3ed2e9704655945bfc70a31eab4'),
-      (86, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '706df6d96aeb48197a1556942b37e23f72f66a61830dbec13214d0316cc625e1'),
-      (87, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a3b3ffa5a877f635c4cd7ace9e723d5d44f2c4e279d224969580118230243cab'),
-      (87, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '68d1e5d4f7d198b54274d1647d12b21553c43b105401501790a61d4c93109be9'),
-      (87, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'a3b3ffa5a877f635c4cd7ace9e723d5d44f2c4e279d224969580118230243cab'),
-      (88, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2ba3647a8f2d4d1199bbdc709f1b3d7b08f2f54e584933e6ba089f0d4d437ce4'),
-      (88, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'defe325828f83b9c4a391366c6fa6c93da7f1a6e227eb18962b73ddc65b18945'),
-      (88, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '15657b7f5f36dc1611e289b8e90d804c145b32dcc22061bd182e60859dd1f304'),
-      (89, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7322be20626fd40d5519c5d8b3dc808638d6efa4281bac434d0b8d9d7a28049a'),
-      (89, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a24af3c4c464a1b868c76ea4feb7ba6ed2044a33fbf02fb1c8d02ea9935e94e8'),
-      (89, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e8e290830a39c25e37b2cec23ccdb0de76763cfe1bbfc2641342ba7e12d86be3'),
-      (90, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'efcadbb4dbde1ef5c7399f1d96e7d68f50f9a4bb851020ffba6e48f8171ce120'),
-      (90, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a952542126a596a46265e2c6ce9f184c8a52e013daa41c936661f41eace05511'),
-      (90, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '68e4eb783559b25ab7022cea9f54a15fb94867ea48890012603cbaa42b33c296'),
-      (91, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8106ea771e20cbcf91a4548e3d5b70f0dee06d5d9f0a7629b686be0f18900e7a'),
-      (91, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bd70cd58bf57c0705156d73c69dc793f0bc12c270aad39b54efadb7f391d86ec'),
-      (91, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '8106ea771e20cbcf91a4548e3d5b70f0dee06d5d9f0a7629b686be0f18900e7a'),
-      (91, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (92, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0567b499f4c63e9e3d8a49149bca5155aeb0681af8ecfd3d05d426d036b778ad'),
-      (92, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '9f57f5202f335d7ae6f13853dd61ef45a5996326ffd56c65251f38ccbd8538e6'),
-      (92, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2c54ab4ea57614ac2ce6ebac6a755bc3afc533c6f5206788e9296d025d8d58b4'),
-      (93, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '09159020da0512a357adf6662b8b785006c22c77ea4d47dd8d320f3d9f1e0235'),
-      (93, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '9e86159ee841dcd50023e6f000a0bdc172e4d921ed43d8cffd466b08992111ca'),
-      (93, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ededad6a98c7554a49f92a59e8bceae113a5a5a05b5751028cfcba3d25fd762c'),
-      (94, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a3bc668b1a8e34ba19f740256921527bb2199c1a2e1457219f72de427d97f3be'),
-      (94, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '6b629ba62578351f478bd0ec937d2a040bfbe4fe9f2427d856aff2caa8cd836d'),
-      (94, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '06773efeed702fe586b5015b144f9beb16188323ca2c760e15a1746a7264209d'),
-      (95, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '93b2c85af6d68188ea33dbc0de338b3f9c7dc5f69f0db64c5efb69790f7d1841'),
-      (95, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '66bff30247e73e4b13af12ff34a5eed82cc0cf1222248222c149cd32092cdbdc'),
-      (95, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '93b2c85af6d68188ea33dbc0de338b3f9c7dc5f69f0db64c5efb69790f7d1841'),
-      (96, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '31c83908206b5563ddff70274ae5a97061279b69a8ec2fffb78a5be2bf5d5d2d'),
-      (96, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ce272a38e0feb4fe1bb708c6d90415b4d978729fa7fbf7beb5e63f36f4736206'),
-      (96, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '33984593698f35ef9083888c631dbcaa68042c15f984f92ececbd3d02d5d7d32'),
-      (97, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '21622891a28b601c141aa0b65ef88ee6e744807ab24b5b689f837de642dc3a48'),
-      (97, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '0e36591c2f58e911557645c88d221dd27054bbcd9c0a6ecb36f1fed5a4ecc1c5'),
-      (97, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3ab088cbf3db8294de25aec4620f7956f785b25979d006a8cfb39c148e22ac88'),
-      (98, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2b804c31840c3d2dc2d511b1ce367a1361ee6ee4a1fb00503e1b3a2f12e40362'),
-      (98, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '23b9aa34c97749da18ff952c2ef327e3ff1b86ac491bd248aa89c12ab6afe644'),
-      (98, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '9c22cca82230e6eb5aec047608b65cbf649e19acf5b84e1b539006820145bfa3'),
-      (98, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (99, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd6b7ad0e8ff8c92e8dab46a7da3fbef18c0e0b1d66d0642abb9082b30df107d5'),
-      (99, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '22d7f3ddc42660b2884ceeb6335a77bba93be1187f132f7d2733fad12dcf76db'),
-      (99, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd6b7ad0e8ff8c92e8dab46a7da3fbef18c0e0b1d66d0642abb9082b30df107d5'),
-      (100, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bd14e3a2d96c8746c4a0bd3f40a19d939c4161e21a76d9d6e3306838f0d54880'),
-      (100, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e035b4638622e53fd376a8423da48b3b274ceea51bd7d2299e3af7e599d765b0'),
-      (100, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a7b4de2244dadbc7142ea389c93af751b485beb455f1d81f4b6c2c6eb8fde498'),
-      (101, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3e71350fed486a54f7b723f181d0875e62f10d69b3b3a5228538682563604a82'),
-      (101, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '306754241cc31a08896e7b8f56cbc50af047ce330447df84b395635d7d6a6385'),
-      (101, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6c43a451d630c127f35b0615911ac35256f2a1fa6cd0dc2b5c2d7284d1eddab5'),
-      (102, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd283f5d2f5ffb3cea6e78ca0eadbb66184e576cf373aa905162768bae4c429c3'),
-      (102, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '7a3ad8bcecb8cc927267e04c80a674849b27ef53ac477f51aa8e9db59b177196'),
-      (102, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'd904e1f1e028ba9058a128a6fd724f0f9892ae8fe49c8f7dc2613183f7f8bbca'),
-      (103, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '56c43cb8b46f764ed7752863d33d95b253b5ba7515085acdb7645e5b0f6f7a69'),
-      (103, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '8fd5c3c19ec6fa33d210163bcf8734efe69a6ab5174e2133f74e7f6ecbce3ca8'),
-      (103, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '56c43cb8b46f764ed7752863d33d95b253b5ba7515085acdb7645e5b0f6f7a69'),
-      (104, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd4e77306b28f2ac9526162c36d08b7246be7ab7c6a09e4f67ef03d713c677927'),
-      (104, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e524e3cb9da00f50a05e433505d14a0711d0f34c5ae91d671c931fa6501637ed'),
-      (104, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b9c1185c07fa77e15fac84e8e894d313da28e85e361501eca31c361149e7b6f1'),
-      (105, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f41a29ae4d4e61e328b2b1307695c3ab7b11d38a59e835e3837f885307c75f1f'),
-      (105, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '96961be21ba80d2103dd568ffedd1a6524d5aa72f00b2bd331196195d864009b'),
-      (105, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'dbdc3c2f1620edb3ebc3cb8d9b04391f056cac306ea736fcce70c7828fc84b8e'),
-      (105, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (106, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a2cdb2128a343b4e08c5d2c641aedb82e9eafba1eaf43841f52598062e20beb6'),
-      (106, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ce5cc2d921f1a48124d6021c4f850a6d4882eefb806a3da20e937297b45db614'),
-      (106, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'b40385ef45de2001ffcda465272da7afd6dfbefb3dfacc49e0cb94e7498e2dd0'),
-      (107, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '21262e16d74d0e05a80ac573c7a71563f8cc3375569bb861f98a8ddee9f6b2e1'),
-      (107, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '6fa467e28ecfbe9fbf7d6e762d5112df60c1ebeb429c55636b1714c564f95617'),
-      (107, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '21262e16d74d0e05a80ac573c7a71563f8cc3375569bb861f98a8ddee9f6b2e1'),
-      (108, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7daf4e0362c0245d3f2fe229e28559b79e98bad7b3a1b1f810718a1f157ef3bf'),
-      (108, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '83c23571b4e9103bf79c9542821887722ceb660b3136d86b3a80a0ec470f7ef1'),
-      (108, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '99b5cda7e282c14be362841d916b1fe226b87d540669b80dd94a21a4044f02ef'),
-      (109, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '74e67393f354440024c126366dcb3b8a867460763ee10ad99cb836bcd3da4d8c'),
-      (109, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '4456bb62fef1e6623a35585927e884d14465206f42a88c82ef44754b06f8fa33'),
-      (109, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3b78a66ba7629e7079fb5df633332f58390011041f150ee8707714931438ac86'),
-      (110, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '88149dea9fbe53a8ea72646b5c7c396594029794c6cff74710dd6c72b1a0199d'),
-      (110, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '318eeb6e53025e27c2715a98191549a7e69db52444970b1d4f37e08f58545ea5'),
-      (110, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '280cd897348c9100635bf79e7dbda96fac1641df479216a6eb059c52522860a3'),
-      (111, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4d5ebe3caf11bfdc45c2d50eb3a1bd5faf9bd6a00cc51c351dcbdc391e9039bc'),
-      (111, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '6eb4c27b845a1430c0f2c0f83928dd47efd320b2ab6827bb3b9cd2bfb913a336'),
-      (111, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4d5ebe3caf11bfdc45c2d50eb3a1bd5faf9bd6a00cc51c351dcbdc391e9039bc'),
-      (112, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6836bddb74d980c73ebb6f0cd6266c411b834e7d2b6992a44217c1e909c5bff4'),
-      (112, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '3cf0f52bf97de56f4ec86a970574dee70abcff802546c2ba2f40bc8affcf3a17'),
-      (112, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '52a234abfa3ad06676e46f71cdb7a821ca35f292c962a1386a44acb7ee5c35c5'),
-      (112, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (113, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dadc3ff07ff610efd9e91840e1460a95ac2d68405863c38b9d0acb6e820337be'),
-      (113, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e1dff67710b9828215b38bb62b3acda1bbd4e13576af606a959244ab8daaf73a'),
-      (113, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '82db380e5fdc6c5f06c93b41c7f2b7e5d6840416fe8bc1fc47484f56deda392e'),
-      (114, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f7bd5aa3fa3ba89b77ba897b79e05f475689a673e38ffcc4bf285b0b4740ca64'),
-      (114, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c5fffacdc68049e3f9ad1dde51093e568d3b3b45be08e46617931add05181397'),
-      (114, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '830b2056f9bf1099e2262d2b2924536769fa84a79f3d3f967d9531d999bba270'),
-      (115, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '97d1b2556fa8a8309f6c181870b4c080771d2d153b5a8ae9ff6c525e746636d0'),
-      (115, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '65833d64dd274ad4112a2c310dd0013670f3a2aadef046044cedfa6cd3aeadfa'),
-      (115, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '97d1b2556fa8a8309f6c181870b4c080771d2d153b5a8ae9ff6c525e746636d0'),
-      (116, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '47fc6584aa56e6c8157dd46b222eaffb4e91a9d9071cb6dfc092454cfaf661bc'),
-      (116, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '5647928d6225583e6c318365a8e9fd59ffc7c119deb26a6e2990e81d8fd4f1e0'),
-      (116, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a182c80b8395b3e324f29f4c5d477c9bdd29eba529081c09df7a76c62d8bf9ee'),
-      (117, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f8954164db9df57712bca798a76fd5cd327e33070f11eee4c864da8b321bd421'),
-      (117, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b66c70e53856b1ce0c624e7d8aa78d9311c68a60b4d524244942f9f95b9ef7f1'),
-      (117, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '142df27c6ec2540f92242e7cedd0406362855b13ec1bf10efe906aac9748b28c'),
-      (118, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5df00448cde0a83da24ddf1a0d57ef04d59d612256babb3e08b28ff5339e4d46'),
-      (118, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'de5c0fb8eb450fb40ae25938f3c4611de3eb723fbdaa2687e6f74a29d9dab4cd'),
-      (118, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'a6449218b819ac1ce6de4c03c41f71c4933cfcc862d761d3db2abcc2b7cded31'),
-      (119, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9dc7f3feb12cfa8e44e035dddc352093277c4ed85d3454541b2d737ec87da16e'),
-      (119, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '9404ea6f321c3397b042b8ff712312bd03e21c214fd267b7279e14d1d53221b1'),
-      (119, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9dc7f3feb12cfa8e44e035dddc352093277c4ed85d3454541b2d737ec87da16e'),
-      (119, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (120, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '470015c95776f865fc2bbff834865a827bc19832a992eb1b388ac4e8f0e7159e'),
-      (120, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '77bc10102abefad37cceee9313750bd9ae5e9d31a463998783ae00c189fa9289'),
-      (120, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '15195067ba8d07ae1cc9830d38347e48a62ef72ef616552bcb413468a545fba6'),
-      (121, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ab3beb0861416d1117f0c05be85c9055f807e4e90c15ba8d5e72f7de586383c5'),
-      (121, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd4f39d430991217d056d49df107f2a2dce403855e4dd9e9abceeab4a54777845'),
-      (121, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5b1cd01e4b5f7717723452e2b1940f4d4424b731700121c68cd2e5b1c07f5d8a'),
-      (122, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9656b81bd5c45a16f337bc7bbe43de82fd0c3956b582dc889051b30e7c10479a'),
-      (122, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cf287fa09cffc5d85103a5b21283ecad6eca2c935058736c2fe967e8db436aba'),
-      (122, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'b814111ffda1cdf1ba8f0ac245169876960a71cf3cfaa9b46d6293411ab2e2dc'),
-      (123, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '87b8d9d001891d54fe7423722f4bf37ac0e1262e662270068f21553de9f0b156'),
-      (123, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '1e68eccbfadf04119f6e44d628e0c52f0bf3c61545d1fd8a99155da125cc80c8'),
-      (123, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '87b8d9d001891d54fe7423722f4bf37ac0e1262e662270068f21553de9f0b156'),
-      (124, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2cd0d0944f7b11a87d8d43f5f26df6f56f31c3df712585fa0a780efc23681ef9'),
-      (124, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '17a03852c021fa921a311564cd02a2050e056def260d4c3700791413d8542a38'),
-      (124, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c7652faf701a32a481b87d90699ea50601d03acebdde55b541fc310e2113d927'),
-      (125, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '513338e5f1d3a8e09971e3ae55c263c17fa067aefdc1db74b72c412c5bcdb08c'),
-      (125, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e9a2eff4d704b274d1f42eb64f63af075b66efeacf55eca5df112a5ea4585eae'),
-      (125, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f04eb2e8ccaa074222d405a1766b81fabb3e51cb9bc6e26d46eef2b8501caf21'),
-      (126, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1285a5364c0640a6fa5dad1388b7f75eba16df3bc2e87b3556469e434d215a50'),
-      (126, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '6d8c1ba23eb842c16f8dab44b255111ade65b753304803f7b187bd8cc62f8c66'),
-      (126, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'ef3adbc7bdb390dfbb63fa3ad9495e08caff0603678e3cb2a1f93c869d31845a'),
-      (126, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (127, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c07475d6c0ca9681bdb992983741140349ad9c5d3797c43297b1792e0d0060dd'),
-      (127, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '31b7a8c0c1af7e5e013dcf1e6ebb1e8ba6a285957bef72e9f659a9116e9e9705'),
-      (127, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'c07475d6c0ca9681bdb992983741140349ad9c5d3797c43297b1792e0d0060dd'),
-      (128, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '01e3a2c70881c9e5860e95cbec9e61bf0a9898ed65c3734e20b6a07947dedefd'),
-      (128, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '276ccbca7075e58e98447efead2b14bfc6021a1172b257046dab4a0b594ed0f3'),
-      (128, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6373e3ee83a2013b0997bec4a9bbe2d534d70476a276bed775a74e6893c6e10b'),
-      (129, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a1542e88d34033ac6074969224814711c2d05c7b7e5ff8c4723fb96a5dfa19bd'),
-      (129, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '8a0d50b1a7eff1d8396b1c6dae5747ef787a2ca11d68d427116070f6f5a45664'),
-      (129, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6d27795fc057fdbc0a61d2aa27fa40a9c7612f88a95a5f05630feb5c1f6c1d66'),
-      (130, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7a4909d9988589056751162dea1e5663eb9d3022841b742d2c5adf275366e7b3'),
-      (130, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '719f6dbc7bc2e051b1f6748741525bf6bd9f8dfe192deac05965404cd16cb786'),
-      (130, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '26f778749579e110c0e72657ecb9306f27c39f067c7db4a1014d0d949236d008'),
-      (131, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c69671494536a76ec0b52d3b6d63e70b6a56978df4eeb320c32348c9090735a8'),
-      (131, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '3725922853048119df370831470c9f6b22e114835c2c906bbf153b3a6965fc79'),
-      (131, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'c69671494536a76ec0b52d3b6d63e70b6a56978df4eeb320c32348c9090735a8'),
-      (132, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5958f68df71294e86f7859c671b5892348d58c104470f8b3067837e541e761a9'),
-      (132, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '98fccdecd8795e1d1ec589ec1b6a30930b001e440e16e887e6be81aa6ea25018'),
-      (132, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5ec05149aea7cf67527391b0a5861c5c716f7c2575915a806a3682d021ec4655'),
-      (133, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f7630c7ab6b96c386889bb63a886887bd549003a6b44cc30ce35c37a2dedf5ec'),
-      (133, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a15b8bc60bdfb695f2ed7d13141f44ec6983d7641e34d1584d8be63a66e25ae2'),
-      (133, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c537586e81760fddd4b0031bb347b25a9e77e802155f691ff8909a949adb05df'),
-      (133, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (134, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b1710e3d88a3e777f94bb64c03baa93ca745f8154a0f127a306a231ede49b19c'),
-      (134, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dd9e109ec752b7f545d7c469f7e5a416bb8c24f4b3ed78478faced4e5a35a1c8'),
-      (134, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', '0b510c30b58ed38c44779081611f6fd423f5b758937ee6b3cdc97df2c67d2e79'),
-      (135, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7d3ca9a65e76b2179c963504baaf76c4ee15e778fb41d8b9f12c048c0e54a11b'),
-      (135, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '1b89c0e70220cf1e12988ce5dc7520c075332a5ff6db9738312c038cec4216b8'),
-      (135, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7d3ca9a65e76b2179c963504baaf76c4ee15e778fb41d8b9f12c048c0e54a11b'),
-      (136, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8e6050c233f63e29a94fb007ca7f2a5400971211ce2aebfcaa25051233f2e440'),
-      (136, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '9752a947d9ce1e4903ef71666599336fd249236dc65c17f46e073ab2bb0e7f82'),
-      (136, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '786339f45d7cfb395a7adc2f417d61d4955519d803f5f3b3ced5841b57997a1e'),
-      (137, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ccf739c8457c102a4e337f10d43696077f93abf81764becd41b6eced62de117d'),
-      (137, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a06feccf395603d58647dcc3b4230134e0ed4f182d86cf041b629a254d4c4ab6'),
-      (137, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0a761c94b78479cd3feff24f83d62e754c86873be32ef03fd10ae82295265c0a'),
-      (138, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '206b1d2bbc15373f85e1ddfe62406282b920a7976f7856585c40de3e73f674cf'),
-      (138, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f8f64d43da57a9a7a2df470f94a8cd9cc60a439691c754856215c5296f94d5c0'),
-      (138, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'eca05717994f0ceaa065a2b24e951c98616bfb33fa02a627dcbbaff74fa9dc06'),
-      (139, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd28b6ef96c840da150a586b644ea87ed84ee582f2b09ae44abe5ab05bf9e152d'),
-      (139, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b54000c2fb3dc72170d6440ec8d75fe9e2f29ec874292c3351dfc48155c7880b'),
-      (139, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd28b6ef96c840da150a586b644ea87ed84ee582f2b09ae44abe5ab05bf9e152d'),
-      (140, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '20bec15e849e5ee494ed1ea63042c05dcda9bec969cd8750ef3a8245155764c6'),
-      (140, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '290925ec3d02dde3fe6a3ca32afad222410a3b4105f173d3e231038a6cb2e56c'),
-      (140, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4a17bf6d6c4a9f9d9bcc61f5bbdb1eeb6b2e1d8841630cab1c5bdd8826d8ec59'),
-      (140, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (141, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '279d7bae85fe1e678f889f517a841e1e0101be99d9b42dbf54bb144443611630'),
-      (141, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '85f69bdc6d5a85c5ac1ba56ddad553514ee0797f4b8464c465938c68e76a3ef7'),
-      (141, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'baf03d152f1ee8e8de09d1cd13a8727513bbe7dfe2b106e552c53972120ecbfd'),
-      (142, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '71ccf6b3756b8f6c1b363ac0d3cb1a1749caea72eb605cefb5b5ca110f29bc00'),
-      (142, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '177c9e29613a38907f23c5ebe81bbc8768597a756eda841d019229ebfeee9cca'),
-      (142, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '2ef21416d428e6173a9133954d530be532ad30d7f5d2fdfab20d8668433eeb30'),
-      (143, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '213cec874b8d609e6ec5649df61bb3562cedd47e41fe80d1f6a32570627a43ba'),
-      (143, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e724c11c598512930b4a4132a4bf4518098a153d0045f6588de02bba96b21995'),
-      (143, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '213cec874b8d609e6ec5649df61bb3562cedd47e41fe80d1f6a32570627a43ba'),
-      (144, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a09470b80f8c44c391bf035d0503d44f10d0c90b0ffa0c14388940ec56085929'),
-      (144, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '82c98a150094e19d298d6d1e7dded93f17d13308889244fd3b7f8a76fb559fbe'),
-      (144, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'edca12af06b2c3d9fec7b037dc17e8db0461ede727c3f257e5d56538ae46d5eb'),
-      (145, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '23ae57ed417e1bc6804eb50e006b2c311742372d9f27407a99c654076fcd8668'),
-      (145, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '555cd094937adf5b11b90a46fbfd3da24ba517c41c194534e92b35b55aa031ec'),
-      (145, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1014b56bbc5580734352c2dc3cf02c08ec29e86355f8461b3a6714e741b1e7d3'),
-      (146, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cf03eb8f5488f6f20bbdbda16eeb861a99c323e211b35bead4683748a0ad3696'),
-      (146, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cbceac9652b2f3d81a676e93f9403d8977d081174a9895cbaa7fa39b9c1805a6'),
-      (146, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '24ccb25024c361fca8cee6d7324479cc831003cf016e881a061572d82e7c1cde'),
-      (147, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c5d81f91d4d4fe33ab3e11903eebd8e9cb16ddc91669b59b5d0e29f50388f3f6'),
-      (147, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e1028cbb08cc7510179ecfa0ed7b80983126d168af641f877d154184d784a951'),
-      (147, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'c5d81f91d4d4fe33ab3e11903eebd8e9cb16ddc91669b59b5d0e29f50388f3f6'),
-      (147, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (148, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'adfdfcb0f2b1c767a8a0fae66f30077c66ca5da068fa5e56b1d2ebefaab1079f'),
-      (148, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c038a318de28c9062ddb930f03a67db9a8cc8bcfd30754089e6853cc99de1862'),
-      (148, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c71696f52116f1e1fef7694e98cfd82a517df9ef59566085500e6e4a5aed352c'),
-      (149, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6364b3e9e1ba3df70e7c7daa39c0d5606881cfedb317e6a31335efab7524320a'),
-      (149, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '517f1a9bea990dcbc6353d3fbd37f973eb1ff002f5901d2c7934ccfa5ea1faae'),
-      (149, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e0abf7a429f5a2caa831ac3349feeb1ae31bc5a0e83dec10165495ae4032c92f'),
-      (150, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4dfbde4ee4c1a8975efc5f36cda43d401536e65b9329f2a461f516cf24bc9368'),
-      (150, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '4647936eaa22db46c41c7cedc520c327028d7f6428b3d5a6d7927eacaa33301a'),
-      (150, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '128a0f4cf0b603473c597420893eef7e4bf2fef05df4bd6bec852bf30ab4229e'),
-      (151, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b29a97cd2b40c6ecefb2440a304f9289a342f1dba804f6f0ca327b627adb2c89'),
-      (151, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd3427c7e742947b2f2125ad813f1ba9c938b014607dbc0bbb18fd27c73a4cd13'),
-      (151, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b29a97cd2b40c6ecefb2440a304f9289a342f1dba804f6f0ca327b627adb2c89'),
-      (152, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '215cd815633e4edd4f6cad089f1f9eb45109778b95c2b2aad7ae0d7445dad42a'),
-      (152, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '54b042fb008510f2182bcd60537780378b60e434d387f73cc1c8391ee6a46b49'),
-      (152, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4deccef1b9f072ad9e5c5a78159b2590d3012718d928036ba34af70e34ab2997'),
-      (153, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1b8a6b53ff41f6e686e2889892c0c81ec1bdc6d3c6f7adbb1c46cc5c408eec6c'),
-      (153, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '8f162bc350b498e4033babdea10a3183e0165939d372f6609fa7a2e825bd6935'),
-      (153, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '806e8fe3e7ae8c5902779e8a925d8ae2b73603ebbc065bd625ed630718f4bc43'),
-      (154, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cdeb5db54c3a7044f727c65264c5bdfba56a3ff9f2157032a1d5237a48039e92'),
-      (154, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '3d0f10a4d5a214e14baa30ca4d2e0dba44440857ce38837ab5ac00b5e1ebe90e'),
-      (154, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'fea95ee6654315a11e31ce972ff371fc74f2ad8dc02dd7439dafe6ceff383e9a'),
-      (154, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (155, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '571cdc1e42d6e39d45838cb37f75e7c58e20f41997e34250de43280408ac8e98'),
-      (155, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a674a79330cdbc9a2431f32bb0f1671abed4deffefadb1e80437f76cc85ff37a'),
-      (155, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '571cdc1e42d6e39d45838cb37f75e7c58e20f41997e34250de43280408ac8e98'),
-      (156, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '692a3d0c1c495c4a6e5dc5c8388f7027b6afa39c1c77a872670cdaff999d4826'),
-      (156, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '013064afd4005e6da193a90dc40cd3a2188e1a23b915570e1383954fc563eb07'),
-      (156, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2b443b7ad8b2e886d0a3cb19b6a62fe3bce638ad0476d3e121271aa40362680c'),
-      (157, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5c019e80b3afc35bc384628212ba284edad3ba43e01ad630bd1291a72163906c'),
-      (157, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c5025f34a999152fe48b786a18bf4b4e56ffc11b6fb3100e6d522544ff95d137'),
-      (157, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b4d66285a0b42997b9450f067004a26918fc1f706b965774ccee0cb87b6b91a7'),
-      (158, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dc167d08b17390448a3482ae350448d960398295ccf7a3e523dde978b03109c5'),
-      (158, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '62e90c6cd6e6710f9befa268f976b30842d42745d49011d7939b910cce87e7de'),
-      (158, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '439375adf0ff9106c29b4de48fbc112e48ab27179128c77ded121d3adec4d6f2'),
-      (159, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'aef18a7c2d493c429f639eeb7908e6f5ece23bd9e4a6756924c5e84de4678fdd'),
-      (159, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '9cf5e796012b7a72961fee170c7bf59536a99070a7a81a54ead07f8d8167171e'),
-      (159, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'aef18a7c2d493c429f639eeb7908e6f5ece23bd9e4a6756924c5e84de4678fdd'),
-      (160, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7be2f24dd2fe40e370f336608a7d7cab40fb79160664d71c671d328ad30a3eec'),
-      (160, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '8309251e952e2f54faf02a97d5c756f91ad6ee54b6b3894f2e0335555e663656'),
-      (160, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3800fad1e760f6f3fdbfd8109947bddea5df8cfd383a9d6b6c5ba1abecde30e7'),
-      (161, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6e4b954c90732498f10d42ee6fa3aee2571c4c9ccfb11402196e411b3f72f11d'),
-      (161, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '4ddc9863127c09b1b53621986aa6bf2c7389def000e8a4cb9caee3b0acacbffa'),
-      (161, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e8066faf5d24644b824660b9a63a9bd87e04a34fa86afe3ea92ba1a3275b57ea'),
-      (161, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (162, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c156f0d23c6ef966299aa02bd3d35f6b1aa2fca4ee2f9a5d33daf8ac112e8fc4'),
-      (162, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '7a007e3761a545fbacc1888f51ca854b4466fe845b0a01e39be19c0a59403c80'),
-      (162, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'fae10859d4ca253d4d3bada893ec67cc77f94103122d06a03de89b4886fd53fb'),
-      (163, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'faae597baacdfd32d60c759bcfa48f677a07356a8e6b5ddd19ee53d524561710'),
-      (163, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '3fd976bdd83c967e52e6f926d28455c82c0a008ec37eb424ae786f8260a52fa5'),
-      (163, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'faae597baacdfd32d60c759bcfa48f677a07356a8e6b5ddd19ee53d524561710'),
-      (164, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c051fd0a53509dd69af2edaefdaf7c0ebad2eed85449e9e438d44d2c808ebf31'),
-      (164, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c1940fa058dc8495862ea0d9362cea88557d40f97dcab1a165dea31fd455b008'),
-      (164, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'df18bed99d344168967b4974046adabba5d871f3e4a0b5712fb67c50d4d45d05'),
-      (165, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3660acb6bed27ee9974c93af8d41598f764220ab19f7cd3be9f81a478f6efa3c'),
-      (165, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '92813e3a8d68e65a8d7788d6e9dc3002ce56ec1c2d1443d989f46211a7728814'),
-      (165, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f30f5f632c8688d71b6e81ee61315d9fa2ef89177122a28258348f3d082f852c'),
-      (166, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c04b9df498777aae5fd60b211062e44b98665ed95fef3581c5cdc8e113ce2cfa'),
-      (166, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '2cb115028f9e7c325357bf346ff7445bc2d7e11aa4694dc3380f622c489aea62'),
-      (166, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'de1da8f3791deb5ea5a11c9a67179b1e240aa14979524a3cc28add0e3612c0fe'),
-      (167, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a4a3f9897208410cad90c97884c100d77a376cdf5a93c0351ad6305225d318e6'),
-      (167, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '08e7d3ac6b8f71e0528562babf304b6062e7854778594405faf4e7890146b1c8'),
-      (167, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'a4a3f9897208410cad90c97884c100d77a376cdf5a93c0351ad6305225d318e6'),
-      (168, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '060748d41376ef747f165b0bcd0bd8a264175eae96a1c1f5c79934e72707c791'),
-      (168, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '72efe3dbaff52cf17545a73c4a61f974292800b01e34f7d749951236737bc838'),
-      (168, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '8c6b9090bee7d63887fb3df693ac11ff3f9fb9633dd92bb39993cf0517e21273'),
-      (168, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (169, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2bdc7213d731c924da282c5f51d25c795a5330e75df8d209775b935d8a998260'),
-      (169, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ec4a89c086b42c63b6826584c6969adc62fb87d14523ab318ab37072af9e77ac'),
-      (169, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2fd2ebca57a0ca730e3872efe63d6cf537760e99cf055b9a990f8b8129dc6687'),
-      (170, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '37307cd87baa37074701ee715d6ddfdf7003698d13961ba6ab4621a6b138b24b'),
-      (170, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '36cccb2fb3de712cecd2a2ed42998201190dcd9508111f0f6b2191c567975e8b'),
-      (170, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '42b9ae1508f34a5d58c5ac8986ce0ef6eb36dd68596441f39ff76f2b337fd082'),
-      (171, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9a0727f17f0d6109586597681df377bedd12325f992fd9c0f74e9abbb2d3bac5'),
-      (171, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '45f8d0aa9840f4387bed231a88812645345fbf18d670e89aac9678dce2d12379'),
-      (171, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9a0727f17f0d6109586597681df377bedd12325f992fd9c0f74e9abbb2d3bac5'),
-      (172, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '18cd6cd997fd68e01b9b84b8ca81e8be279e2b5aa37ebbd53e37241d98cea2b8'),
-      (172, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '5328a815251b86ebe9ff3c637ce973a9fdb59e572074a21f77cbe2fe7a2aa22e'),
-      (172, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '133361179377ba2ef83145bc6f56d541ab03655e7e08c180aa4fd82f9ce84fdf'),
-      (173, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6710fd47e09ebf7b487b5883a543429078a6a927f3d38067b4f6087be9a0b12e'),
-      (173, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '51b2c25edec9b0cc56ab729f41e0253aba494c294b407b1d6e6737e42fc56172'),
-      (173, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '887c21f8e5d42e2f4bca1c9e7a5cf48b2f66ac53cd3649273d245aa009e7c737'),
-      (174, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8a78c0d243799585ab6345c4fb6f3ab08d756c2fa3cb32c7f2012fad3d00eaa3'),
-      (174, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cff75283536d0319f875fc1b904dacb26cc2ea8ba48a0f571fc3bb5fbee5391f'),
-      (174, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'df1fe265375cb2d535a219016f20ebd84b9b75fb2ff0800b853cf60903e5cd9e'),
-      (175, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '75842d96c1f53a5a0689d529f07172de81a3d99e505c36b57a153b0fb36d6eb5'),
-      (175, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '7c6910c33a1c593cae9a29a2292456503e4d89810939ff09cc7e891296c5cf5b'),
-      (175, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '75842d96c1f53a5a0689d529f07172de81a3d99e505c36b57a153b0fb36d6eb5'),
-      (175, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (176, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'faff16f0db7e0e9ab1a6f5f374a7aa3ab716a1b31be4888da1874f75897af48b'),
-      (176, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '79ccab4bd7a6a36980612603cb903e860ee4d1fb33e55230a7f82dd90615e5e9'),
-      (176, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '22555062bf294c596e24361b3b2c000e9027389835b865ef469b2a8fc391aca6'),
-      (177, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '17aafbc6d8c3678618063290ac8273fc7d6cff10f459715e73ab855332acb63e'),
-      (177, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a57039d03a1bf42da73cd0041dee9a68fd32d40b7e6e3bc06d5614cd5add0dc4'),
-      (177, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'aaf769170a98208e6e7d254bdaabafec63fb7decef2c1972488a509bbdef71ac'),
-      (178, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1715d443a7f12eb2852393bfe10a772a881ecd97446f1529f94b11540562a17d'),
-      (178, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '42f1ce577e3762eb667c35f5fc6000039eef8c7395c449c9ef280e07956ea633'),
-      (178, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'e703102dc971f6d7b81b75e1636859b006ad9e6d0b55ff2c625424af79a20e82'),
-      (179, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '62a44b51025f5ac174a9434807d4ed7935a9e5c3ac896e2071a496563e6aab68'),
-      (179, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f2b12c4fb4fd365f6b185c0f9db86307aeb2c7028e9ff40f917eca3cc2c45e5d'),
-      (179, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '62a44b51025f5ac174a9434807d4ed7935a9e5c3ac896e2071a496563e6aab68'),
-      (180, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6158fc34d65a2d0a225b4eea3f19f2107a63e32fe6919da444b41312b2defff0'),
-      (180, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '91e6f638f372c3a70e9d79d79bc7f7dc70049169145f2130ce707d295adc024c'),
-      (180, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '414cc41276076544a971acce1d66e265c25631fb1721695e942190cf23f75781'),
-      (181, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bd6f3b0f03a41bb68f130025ac344a7719f22acd6713b140433abb6946f11e9d'),
-      (181, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '2f68d5a10c2174df438a9b331d301bd9830c5aa0486f2ba593dd7499eccfb840'),
-      (181, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '611f499d485ff3115b8f99c5ddd16debaeaa73d9f6b9b13d35119c92e0c0902d'),
-      (182, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '81a4bd53b56516a0a96145ea0591e5a3f17da7d2b31b3e91ad8a213b8b86defd'),
-      (182, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '83b04d76f8ef073cc8f8d6e9339d16ac4d11fb53c5d760b7213269f1d7c23662'),
-      (182, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '19a0485f1a90557521c84783f31af75f43e16d673a1310a6ad1e9e3fc655c7de'),
-      (182, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (183, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'efcc0e026b711316799568cb14594d210e3f674d15a83fd19f0a19c32f3deb77'),
-      (183, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '16e76d6aa8414864525ed91e6247f9b88da333286efd6ec2bff11006102f82f5'),
-      (183, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'efcc0e026b711316799568cb14594d210e3f674d15a83fd19f0a19c32f3deb77'),
-      (184, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '32f773f5c464f3a08f2a1ee8db1367580da6080bd619cc6fe3dc953b63e9cd10'),
-      (184, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '32771707d5d77e51caa2bcce44ca734cd9736bd9d3972ff209b6cb1ec37ea412'),
-      (184, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3490c601eb54a0fa78a4db36e287602cbb88ac681cc9d600b6e5c384cafd8e4d'),
-      (185, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6536bb2624b078f63f056eb7353e114866723a2367e0023069566f4ad5ebc6e1'),
-      (185, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '5916ccf6f7c83f69d78acdf1525724295bfd575e297732aa4ecdc5c76358fddc'),
-      (185, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '44b8385b1f6863eb5ce615c108dcec33f85e51fa0515458fb7c78a65bd71c197'),
-      (186, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '241f8ab934ab222cdb8128f8808b694ca90f0acd1eeec5576df1496b301509bd'),
-      (186, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '569e85b1c71e803f0e60ea363b47e24b0c4f7000b8d348298f15c18dec37529b'),
-      (186, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'fd9071c80690d754abfee2d2f30959e8584ffdac10a10730092b7b28d03a4b83'),
-      (187, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5d05f9e538457980f883503e08163dedbec2f14997604d1d4f1d5918ad406449'),
-      (187, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b2b598e7fc9ab0ec088a1b74573583a180b6281e2933529d1cf50d4beb92c7be'),
-      (187, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '5d05f9e538457980f883503e08163dedbec2f14997604d1d4f1d5918ad406449'),
-      (188, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8ed32e1c7334df6a2dc3f13966e6b5c8fb34029b1dda82b5669b08fb20a237db'),
-      (188, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bd48d39f5ff40af06a8020e11214a269595a70827aea03689ad2360b01ac034b'),
-      (188, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4906135ad4063ffcd9505c169480e8a09624a1d02cb95e3889d847e807f1f5ac'),
-      (189, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0f2cea35625a968e479d56aa8110ee7dfad90a587de8f30b38f07357c689d1e2'),
-      (189, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '76f1ff0e2df60da469032efcf80e2a2e631c1d0265f0287cd37ac03d421facab'),
-      (189, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1b1e71029771eb14daaed8b9e252acc8573c4f0cc290ca36fcf906d6c0d083b7'),
-      (189, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (190, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '46c9543867b1d8bc8cbf7f22860a27e781fc66c968401000774f86083edf990d'),
-      (190, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e395e266887ada84ca5dd26aa4ecfb919b207b403a6dbefc0d390d9566529d9a'),
-      (190, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'e24c8f790e373d68e3bfbdb5d0797ce1037484d32bb18c24248669791cafd627'),
-      (191, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b5bea63c39e9cb8ae5bf48ad1781f20cfda59af0117d61b2557c3fea05074cc0'),
-      (191, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '1610bf39daad6137db340787b69624dd3f7e064d2f79dc21a5d3d3ab1289c6e1'),
-      (191, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b5bea63c39e9cb8ae5bf48ad1781f20cfda59af0117d61b2557c3fea05074cc0'),
-      (192, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6486d92ecd844c57a91a68b80ea1e7829d75d1ebd644ae1415f6943d6d51ba6f'),
-      (192, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '8204b641de441b048413829fca1afcafe50fb00eef9385c8fcfcc1b927b2a063'),
-      (192, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f40ca2dc7bf7c6de6433cacfd15d569ffa4eb21abe77314729e9e6004bb9a9e3'),
-      (193, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '56918e9facb599c58bf52c44ce54318c87cf2acd3f52eb5717c2affa904bdb39'),
-      (193, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b607fe489570e971a0db0ba6c8eb8f4e8f332ad60fb655b6affefc545a0783ce'),
-      (193, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b6347d32df8b3320c16a3c7127b4d75fc6dbc24c1c4f4b017b0c071afdc92033'),
-      (194, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '420d5f8e79a96fa0bde0086b59b89dd6523ab99917082c22a5ae8a1375abe6d5'),
-      (194, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fdd702bd6c4e9615238678ab3cc52b28c495ec0840026e69a5cae49e976c60a5'),
-      (194, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'dd240e3d70d9d0fa344534a02254a5f215c4bbe30b58ba62473cb1deb2ef3a0b'),
-      (195, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ef91591946b36de8a894d43f67ac707a4e996326c6f478febcb0304cf00fc6d9'),
-      (195, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '2dc614c5357835489c6d1b4a3650733e26839335f27967efabc300e1c235772c'),
-      (195, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'ef91591946b36de8a894d43f67ac707a4e996326c6f478febcb0304cf00fc6d9'),
-      (196, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'de6474d55d949264f9a2a9dcd7e680ebec678ba51422fde532494b0fbdeecc4c'),
-      (196, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '5a99e412a516ca7d86fbe54001fefbd34a64d218f40e705869ae141715ac9788'),
-      (196, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0a0e0a9044459f9ffbb3d2096cc731790c5e14d8ddf1bae96db9bc412eeb6c64'),
-      (196, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (197, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0ce5f9d16ce54ed35516ad840f1ebd6cffe81f6a7d9bd08a164e492a686ce637'),
-      (197, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ff696ee1882f26d72b2c29eb80afbfa8b08c50fa66b639d3fdcc750dad94a2e5'),
-      (197, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'bcf7748473e706122e81e6915b8d74eb132587d8b0277e30bad32fb745744cdb'),
-      (198, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '57198ed7319f463fc947ad6785d32659b0f028756d0ef4c15866270289a5e9d2'),
-      (198, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '51d9214d8385cb36a41b88436cf662f9abd53cd07a7fde03d4191b0e54d6fe5f'),
-      (198, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'd904e1f1e028ba9058a128a6fd724f0f9892ae8fe49c8f7dc2613183f7f8bbca'),
-      (199, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '057f702b41aa55dde003626c00c4d2488d1793524bdb22215ebeaab78e6f2ff8'),
-      (199, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '4f8557f163ce63edce415fcfc1ffc0d80784074b3133d27c14c15c913026ab93'),
-      (199, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '057f702b41aa55dde003626c00c4d2488d1793524bdb22215ebeaab78e6f2ff8'),
-      (200, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fb031bf8b0eadbb1246ec76b27630462d9115d63cc8a5f276ab54d70e5511c1e'),
-      (200, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e40132fbca0fbf90a2049bcc4ec5e8a3bf2ee67589d34c62d0b3d4a746ce4070'),
-      (200, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a83a472daf4ab5cca43b5c2d1515128c6cffd5b2ac100e5acedf49bac0558442'),
-      (201, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b40a12723ed6efe00066d9f637761196e64e23ecdc84f9a2e8d443be5930ba9f'),
-      (201, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '799fa8e8050e950557697699eeb8b92b1e828b5663363518c9a9f132b7beddb2'),
-      (201, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c476e92dbb4d4661a772b204b6060ea0f4bc85fba14d060d8c1212cc5d927da1'),
-      (202, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '636a767a13c3c08ae8c7c6d8a6f7bc84e090069932cfecb1dbab4956e665ca19'),
-      (202, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a12bf01d02d1c67ba76b0ec4418d0d96c1fe98ebd59acf0d56cd6840c963ddee'),
-      (202, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'ce615d7494227ae63a8f8af6ed2d70a335c1f8ed268f2bdc00f0cb9af52abfff'),
-      (203, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '91c5c7953c50cca794dd6ea7ee4e321294511ec46b7dcb448ea8ed69ff51d6dd'),
-      (203, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '5f070fd3afd625e751be492d91a50519852935218f0bb8f878631fa4b134c45b'),
-      (203, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '91c5c7953c50cca794dd6ea7ee4e321294511ec46b7dcb448ea8ed69ff51d6dd'),
-      (203, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (204, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '92381f15fc5dbabfff3d9c6b7c590805233dbda563582f63569191b81327386f'),
-      (204, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '087fbbb0d3da9c95d2b597993e91e8ba1295cb8fa27280190a6b791a1b305886'),
-      (204, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6fcbd2802061f90566500e9fcd170612777f3557eb922859316833b5740da36c'),
-      (205, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fff9283791a14a23b3634cbbb22ca76242c0d25227d219c35ded9d5c8d11826b'),
-      (205, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a828895e52a84bbb83a9681784843853f74698e648a98eb3b6c362f8d1d6ce1e'),
-      (205, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e7569c8540db69b0f2fef1fdbd4065bfb1c9cb59f17c614746726b259eeda474'),
-      (206, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0dca8fb9ffcb4eea29a4f3913d5ad7a19d7e5e9130c8cc1275095fd50434ea95'),
-      (206, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '1aaaf3466c454272b9c54c281e4f622c4a44ec7f56c3d636a16e9f8056339d35'),
-      (206, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '001dd650bee430b7b72d1436aee4b825d6fb5fed41d3c899721d81052e0ed2ff'),
-      (207, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd38f92aa4a29788dd6903833b32154707e3842a9c76a8996cab064fe877c4f72'),
-      (207, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '341aa5b0678ee65dbadc9573cbc8a13d7671d3f7163527a9c3bd64709abced07'),
-      (207, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd38f92aa4a29788dd6903833b32154707e3842a9c76a8996cab064fe877c4f72'),
-      (208, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd00696c55cc9c7dee6462f4cfa62e1c5b40da7b892c121f0f6a98c03901e81a4'),
-      (208, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a43f65eac34f764b542a3dbb342bb7e59e2b9bf421dd723884e6bf140c64b621'),
-      (208, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a975fac778198bcb9780b346131adee033f3f2ab32a967e6dd79dd1c43999eb5'),
-      (209, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9e25a82cf9ebb191084b4ee619a427c638b0b4454ce93a0ae0944b480d3542dc'),
-      (209, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '0dc6253150f51a05ca1b32a87e49ccc181b6f57039963b520739c9328b5b3c8b'),
-      (209, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4a553291d0471dcd15acaa60744f19aa1dfc983886bab4464b1984e04f3d50e3'),
-      (210, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7424cace08fe8dff9ab3e8bb3e5c030688656869db61cfe98e8907cf56594ab7'),
-      (210, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '260eb7d1eeb0c8739425baf1c10e773f24ad2b81ee6ac96305ec03dfe91dc0e8'),
-      (210, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '1bfedb90a487ecce837b77d13c349bf60548cc0326eba5435fd27c359231b6ca'),
-      (210, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (211, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1a6233393e555be88c5f9709d8f6cf62cff87841dc98731736e493958ecb33f3'),
-      (211, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '62925480a178819122d25e79ebb9ad81641ae32b389fd625be97e67b1a146cdc'),
-      (211, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '1a6233393e555be88c5f9709d8f6cf62cff87841dc98731736e493958ecb33f3'),
-      (212, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e9b1f92e55fedd020d6992e0e48fb867513d6202e9d5b8cb9ff87e427660eeb6'),
-      (212, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c8a531e9c19ffd0fd3116a9885dcd1643a29406df96410abbd50930f342f403a'),
-      (212, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'cde83a585e57ef9b8013dc4b801804c2c262c78965c13cc6022d39204fea819d'),
-      (213, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cba03a34c77c3d0c1e98ae26f54c2a99367404c5f12575ae931a6897a085f734'),
-      (213, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b331f5a07540ce629720bfebd278f9556b5b7c80edc10319ddab6e7917758271'),
-      (213, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '25761575fc88bcd50cfe0a18d063cc8fa62277c4b2f807ed9cc13ee146666e8e'),
-      (214, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '67913a8684863b19ff56fd809d7537d5300a247b118dd43e0b091799edcc1c38'),
-      (214, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '95a1bf147adecda8f4c1c68b4d724d83478c04becb450eced30cd1bc19acadd4'),
-      (214, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '3b10d0e4b6b1ec30c7e4023bab7e9e16178bd5dcf6428284e12db8458a231016'),
-      (215, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '45075cd5493fb65f3824c42d2796ed848b4ec68d8d3c482853e63ef4ea92a99b'),
-      (215, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '3b876f252a73dd64889b7c5cd3102b9f0e3598a4d85e8da3cd01e4130fbd6c66'),
-      (215, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '45075cd5493fb65f3824c42d2796ed848b4ec68d8d3c482853e63ef4ea92a99b'),
-      (216, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6dd9d4606b64a31d98f0db949970ae32aad2796283a38cb35f83d4974d7cbc0c'),
-      (216, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cac05fc223c81f442bcb4bf7f90d5634a936e9152796d11ae235a0e87a6a7be9'),
-      (216, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3e185b92b0afdc73d609dea6e5a883a15c3a3d7f51d863f44be23091917bec75'),
-      (217, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b18faf88d6f0e5a45dc3bd1d3b00bc4f502f12c8b9a6f4e55bac751f84e62029'),
-      (217, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '67f1b56502b929e5ae011c11fa9c4f74a574407d95c1b0c15cfbea292adae0db'),
-      (217, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9a3682d6489343f87bcc04b6a756f5c7edf04d1e720af4d5da342a9cfcff82b9'),
-      (217, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (218, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7eef6be1ad9feee7b9ee4340ba955dbcfd9aca77cadee12aa993fb411f164443'),
-      (218, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e8e50f5e255d30ba503581009067c8dc3f6208a94113bc205e3ce6a9bb58762f'),
-      (218, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '81c005ad8123440ebd2c55ec19f865343d1fc36282fe9c2d39064f401506fac9'),
-      (219, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '11ed106da3452990494d3ed1d56867b1b6f471e95471567ec8f15a628d0f7b7d'),
-      (219, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '61d5d7b2f6e64ca0a0a3f31424690f05885aba5ab9a58eba8b013a1a54fcdc1a'),
-      (219, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '11ed106da3452990494d3ed1d56867b1b6f471e95471567ec8f15a628d0f7b7d'),
-      (220, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ffe9c6c6a0b634a2d38149ffe29aba52b2d47c7263e9fb922bcc96abe87c9389'),
-      (220, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '8ddea099efe5754ca39c1e618497881da20ed71a34194a1275f1637b7e87bf86'),
-      (220, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'dbce3efae04dba93dc30e691f4d5d646618ca63f4396864cb9ab3a34462b8c6f'),
-      (221, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6785370c0884ecd32ee8895df944f48ab2232192cfda1ef5c2a6a230a7fba32f'),
-      (221, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fe8769ec49c90ec44eb6d65996a801e5b25054f059ec34a8af6b2dbfd0fbe8a7'),
-      (221, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '44620db6e8542cf755d9c2ea571e162c926ebd183dc6d67dfe86e6e49022ed31'),
-      (222, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f9f83667f45a10a2e035c83a0311a6107fb4d10983c6848d2c0cba5c5f99039f'),
-      (222, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd4a12816e9f38a11614632a0434bc9a72349c409d4b390576d633e9513bf14db'),
-      (222, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '78f988217df713d0d720205f98fdf8545232450ca6909d44f4628dba124cd041'),
-      (223, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '88406cdcbaabc0973cb6a27b99d6ddb631bae6b7ed4d14f143a622277b5f9c21'),
-      (223, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cc2277d7dcddf29f216935e9b45868381915cb0187f2c7b1d0e30725b7be67cc'),
-      (223, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '88406cdcbaabc0973cb6a27b99d6ddb631bae6b7ed4d14f143a622277b5f9c21'),
-      (224, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '18b9c8273ab5fa259bd9d88faad956628fc14eb5b76f9921050d025e92303aae'),
-      (224, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '7753a3a2f2dea2c2bc0cf9741c443a35e1df51b16e3837556d56129e87316872'),
-      (224, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c0926b95b4be7de1935042395fb0b8c08cf182004c329b5aa4fbf7460730ed56'),
-      (224, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (225, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3d42a78501e47e130942cdfae25e85a8cc714cd57484fc1b89d9b057fa73522e'),
-      (225, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '1088cb43498cb7be31f4e5d6fe82d920551744366b98634d994be065f30c07d3'),
-      (225, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ee3df786cde1404eb5c0a4442370f1d347f541839ac5754a45ad69edad34e2c7'),
-      (226, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e0eca1fe4332ea3c8247dd011ba76016519823ba43287f26af2969477b678ffe'),
-      (226, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '5b57733cb61f49b3cf81f32b510546412949a1231e121457576574ab82310fc6'),
-      (226, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '9add33cb0c9d9178c5a6882f1d366ef0b2eafda4c48de0bd52d393bac174f0d1'),
-      (227, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f21b79920b713be98483ecc7e1285e01b8ee9ce45a9017d84f99295416e79d95'),
-      (227, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '157ec70e9174d538c0481fdd0d2e80be3094804e8855e72acb21dfdad6cf6674'),
-      (227, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'f21b79920b713be98483ecc7e1285e01b8ee9ce45a9017d84f99295416e79d95'),
-      (228, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '600b87a415bfa538cb6eee1c451a9452f26ae25bd97e830b92522ab6d1f85d26'),
-      (228, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '2236eff0a2c497e1d6bf9d273954eb827c231e8d698dfc96c5b9a7e33f23635b'),
-      (228, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '04c9e4ef0163e9fda8a9853f477c61eb4e12395f4fabb7232c974174b94424c1'),
-      (229, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ddb33207c2617486d5fdd9648107e7f764efe0ef17570cc63f2e412a32f05a3e'),
-      (229, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b6dda03da23870a47ad34175ce12b05f78acc5ca43cec3993de09a7effaec015'),
-      (229, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1f4329c5dca456a5fd636a4c2edfb076d5c08391f3324f603d7f8a619ef58f2e'),
-      (230, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '67da25a4b411f3adb9304e36bc47c92508873b1c577088ad256ae55fb6d2fa3c'),
-      (230, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '47018d6c1418db12ceb66431815030affda1bfc15a29e17c9b4130480f329182'),
-      (230, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'a439a1e9d4dca6b9ac834c4bc5951a74d1ba3f399df7d7b58f94ec065e04c010'),
-      (231, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c42bb25cce41d4347b905d4147db4907a1d2f97aed0afe098693882b688327f2'),
-      (231, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c629528c7363992c44ce3ad4cd8457c96f99883369b71ecbe5a2917473df18b2'),
-      (231, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'c42bb25cce41d4347b905d4147db4907a1d2f97aed0afe098693882b688327f2'),
-      (231, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (232, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1ddb2c5c3113ce1511abeac7459f2c91535f02daaf1ec716974a7e1f4c642819'),
-      (232, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '5c3853b6dcb12f1821a45b6a10bff36bf170ed8ebed1e1e9b32d71e3c07d3a56'),
-      (232, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7669283866a347e6ca8d6d469b18a7b4586d76f3349e362a84672c347cb8bbe7'),
-      (233, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '451b98ff1ec1d48c72a4ed4d15e82b67ba1bbb409594c1caecdff84505fe077e'),
-      (233, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bb2ae39830c99bba5c8363cf502875b7eff66283267e8b6fe322ad7df697c6f3'),
-      (233, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'efb09c582ac4caa837ad99884c3827ecba6d3b49107ab09e7d0e91a04cd8ac53'),
-      (234, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd1aacd41ff662c09780d3e000736362ef8c7060d8267f698140bf0052088475f'),
-      (234, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '8a94f2a2e43b461dc1f01096019a9b4d23e579964390dd2999b5d310d9b52bf9'),
-      (234, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'f25f79b23640f7e6a706fca6cd50f5cebed1b6f923866f78a28ed7f9233b231e'),
-      (235, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '47b17bc8b5c45fca6f913df0c9d2be3a55ac1f82d05d96d5ca21978ed7dcafe6'),
-      (235, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '6f98576b60bb0bdf9a39437b59173586df2662baa0de9f0bce51725df8ae7dc5'),
-      (235, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '47b17bc8b5c45fca6f913df0c9d2be3a55ac1f82d05d96d5ca21978ed7dcafe6'),
-      (236, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3230a2c5e6f2bf694df50188ee6013121a421c8950738044ec8fbdcc926d78d4'),
-      (236, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ce09107c5b1d813a81388e232e91b02433e5fc56c3241241d9c0f99ecc259dcb'),
-      (236, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '546454a61463743d41747d4e8799fb621effabcecb667d74a90ada5d48fc2260'),
-      (237, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ff5d3fa4b07eb6d4b92cbddfbcf8b064dda431cca6cf7cfe3084b9fc1e19e983'),
-      (237, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '6db2896bbb434c0b8fafc2bf7854e1526292baa519362c38f516941fa1da966d'),
-      (237, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4699508c3832dd53707a2cae6122babb3791bccdd827c208d6fdda6cdad9478f'),
-      (238, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b563680d13735fb1c349b90c7f230700bfaee46fb32021dd45429744263073c9'),
-      (238, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '0b796b3391c078c40acbda29496935cb112cd8ca981de6c8fcaee94e1c259b6e'),
-      (238, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '56b5f00070a7906899b71669a243f918fb057b2943e7b3badf702e58ee0403ca'),
-      (238, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (239, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '081d1ad04df57b803dea3f51f28b539bc85cd19db1f83ca2f548205c8bdbd9b3'),
-      (239, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e59e787f299718e565200483097331da2ef5495bb3f237f63e9be75399495fe1'),
-      (239, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '081d1ad04df57b803dea3f51f28b539bc85cd19db1f83ca2f548205c8bdbd9b3'),
-      (240, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '07eab744c4893de82c26b93edd5bb0916caab6072216ee53c4973468cb4505e2'),
-      (240, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '3aba191f32ed13b0b188d95ed38944ec57ed09460333c25a11ac88ce52eeb412'),
-      (240, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3f3c6bedf960309ceb9de02c7312cd6ad4ec3c84303460781a5265525333180a'),
-      (241, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '53f9d126852c9480b5721e321b97d8cca2259c5f6f22158cd3d98e782da34b6f'),
-      (241, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cfd2f8184ed9d8fc21f548e4d374a7a26624f249a579b2d651caf82b1b677afa'),
-      (241, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd77c697d9aeb1c52a8ca3973f3139c2c8dea91cf2c0efc389f6f9dec28f62b80'),
-      (242, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f58081c648a20702f783ff23e269930b0b6bcc1fc53df73bd2c155aef20d1d0c'),
-      (242, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fb04d2066682057d3f883bb2960a91dd8423114cfbe1d437b1dac18aa75109b8'),
-      (242, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '9c0095c04ef53d9df41602f3783c90ef3c3e27cc9d0b38262d23930db6313f5a'),
-      (243, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'db75e8dd9fcd52513c06ac06485c30e1409ca161c729a2e0eae6db6d063fbd90'),
-      (243, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '3e6da1dcf1bb49609274e5799ecd5da8eb734f2d469a496571d35ef28eb2b857'),
-      (243, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'db75e8dd9fcd52513c06ac06485c30e1409ca161c729a2e0eae6db6d063fbd90'),
-      (244, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f4b0cbe28536dae677217bb470f195b1072f77dc8b723c7c6abe6ea1490c1e13'),
-      (244, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '274e1436bd1e97d7678f933b72cffa80d7f3ba735332910caa38cf72c962a03c'),
-      (244, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '079d67b33927c57379677169776f0db3459df564ee5480ff1eab0b98cedff8fa'),
-      (245, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '93f2b2ca7583c005d6105e15072fc159a0cd4f8b99a78f660f97f680bbe60ad1'),
-      (245, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '57388b1a51448351d10e7abe2288b16069894a80ca63619492373f97362cc9c8'),
-      (245, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3e64cf02d846a0523164b7428512f718e9d3a114c86bbd0eda3295871145ae67'),
-      (245, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (246, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6e18b50b29c5a49f7adb9a1107519b9551d9abfcca27c2fa34e4ffc891d0bc02'),
-      (246, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e40ef3ff120e083a9f768b3497100901b77817db07cd129f132211135b460c49'),
-      (246, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'c4652ef949a92c99907183503484522c531c3d4d374def8913a48c6b06995f47'),
-      (247, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '388d24f316c84c6bf203c52a4253cbbb6dc090782f042cd67b17b634164c3d90'),
-      (247, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '98f38bcec9cf196decb301d436875cdfd228090ae36e6e4ce4e23fb968461ffe'),
-      (247, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '388d24f316c84c6bf203c52a4253cbbb6dc090782f042cd67b17b634164c3d90'),
-      (248, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '29a0f00cfac4d84d0108201e840f47f744de0b1a75cca3d9c2c09f2289dae742'),
-      (248, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dc6d6d4d00a40cec5f7ed27e306bea0949788eee39b6f3ff67127ac011285a3e'),
-      (248, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ad33e189ef2773a92e221a55c8b12a1efa69bd5912e88ed57576d2058b35dac0'),
-      (249, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '81e5c06ebd1b43831e289937adf8f75f847a4e435be1b4a679c3af5007785148'),
-      (249, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '45d76c94fdd68cabe845aee36d7986a33644cedc92e7402858710cbad53eb4bb'),
-      (249, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'cc7620fb9693d071ecc8d17c373d3f53567b21e3552beba7ab1a662d063baa0d'),
-      (250, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '36598967640209d6ff0ce2f8738ee3ab5ffb83bf661692a7029532685433c046'),
-      (250, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '8bb7bd05cc4f248b7efd4bc8bc285a93eeb267ad461bc6cf2b7b6cd47122a9d2'),
-      (250, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'fddc2d21ffdbb9a3fbc1caae6cee854a6d2a4fe64dd4db44fc532789a75d3902'),
-      (251, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd5682a65a9f49b18e4db9699d8a767699f6a81feb4153fba914fd1beba296e52'),
-      (251, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '98c07bf20f0c59a13fc4e4358a82e6249a46b418317f5763fee1712010fa202c'),
-      (251, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd5682a65a9f49b18e4db9699d8a767699f6a81feb4153fba914fd1beba296e52'),
-      (252, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c56aa4d6571eb4810731c7cfbc46280e08e89489b7ff4447d986c4d04c11adc5'),
-      (252, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '97f2e2fbd7b5052c0e870088fca95cd56e9a4adeff515eca21ce14bf5aa9f414'),
-      (252, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3933318f4321e87b9aa0f93cd760aa6d2484f95c1671170d3c18a89d073f483c'),
-      (252, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (253, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'db83b6fef834d88e8ed973e7fc6baf33caa6eab1315a2f3f2c6c59a6b7861986'),
-      (253, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '41fc18586f8beb3efde30a6090752377c8401069a5952e1acc52356510c90a0e'),
-      (253, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a9cd9096336baa1c83ba2e464eb08a47b12973c96c1e1d35266ef020eba77e94'),
-      (254, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5fc066d92e8b28090af8ad37fcd2d81899df623a28fa2b58a759e7224f1dda08'),
-      (254, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '7caaa236be395af825870cd5233658a9a106468b64c71679523ba376cee2f98a'),
-      (254, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '875fd088c3e4fc6a48ec6d7f9b897956a5ab6a83b9710de550857731c1311fef'),
-      (255, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f81e8a9f9d889e47bb5d89cc8bf73fb1a53acc59adc0f389e56a00f21eb4f66e'),
-      (255, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '7501de1cf7d4dd5371ae844026889fd7622ba8213f518752459b52da46dda894'),
-      (255, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'f81e8a9f9d889e47bb5d89cc8bf73fb1a53acc59adc0f389e56a00f21eb4f66e'),
-      (256, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b00bec1af93d68b18ca833f323ddc36a120fb7bf051e91f891bd6ff02582dae2'),
-      (256, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '2a806d20f53bf4c21de434dfada577a20cf8cb11a9dafcb0eb14a8095675e174'),
-      (256, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '00e03fb75e8eac479ebf6339450e643158e8b9ec5bdd34fd2251346141908020'),
-      (257, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7326f26e64880e719f73f87f1ccaf0e095bb42782a2e1745056dda39270ddb1e'),
-      (257, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f7c0741c92d167a16d71581a746f4a5f3ba6ce9acd2442766009ac5d7503f27a'),
-      (257, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '653fbaa2b847142057bf32467014fdfc379a3eaa245cc5f1575ee2e8dffc4bd7'),
-      (258, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '476f97aba59b174cbdba62b0b64489bdf8e0c6ea24d4f1ca92b989404aa39618'),
-      (258, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '73c9211523bf00686146476936f59321bbb55b7aba86117fcc6206f12ee658cc'),
-      (258, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'bfd0802834c451dd99163eda23da788d4eea3b9ff3d08a8295f623932f459c55'),
-      (259, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bab954512b04138d8ad137d944cd3c3351921f341c5fdf1f8d83463b704c3d8e'),
-      (259, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e825e68747b1b4e55b5b20a8fe524a9815ba67388c29b3c29ac55af30dc2f5f6'),
-      (259, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'bab954512b04138d8ad137d944cd3c3351921f341c5fdf1f8d83463b704c3d8e'),
-      (259, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (260, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd0abe13d8c977977d8a3f7acfc12376fdb0c75ea89d1afb46aa58b023827d751'),
-      (260, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c262ad2411d93bb3428c1376092eb6aa6159ed5010f3ecb75c4c5169646778a5'),
-      (260, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '102c80b76a24117092c5a07318b9a266cff9fbe3f4b1d48910b885157f630ec1'),
-      (261, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8288f23d3a2e49a6674bce807a549cde0f4a1ec2d54b1e15862b1a4fa49b4741'),
-      (261, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c4f9912a44f8c1ddac1f36ff921f79c116e31121377444609d76e17c9d55ffef'),
-      (261, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7e611c68986ec17ff01fb35112e9e45a330cbb48d49f57f5c6a3fe6207eb374e'),
-      (262, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'df3fcfb056a671c19a73302dfcd291640b087b87d851fbee880ec1b417a94972'),
-      (262, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '5fbebb261c73b7eaae399cfb21ab1378e77d5126ea69310524435a267c0cd331'),
-      (262, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'a8a9f77f22391d60664862b91784956b36f4fd982d02777b564ee16faa0a0d10'),
-      (263, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '21da3deba1fd71c2a2850a1e661f5e6cc2d855327eb0080da042a87634385509'),
-      (263, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cd9610dc3a3563fe3ca6bf0cdeef49d2e3be90f45d0f43dd607b3181ddfe641c'),
-      (263, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '21da3deba1fd71c2a2850a1e661f5e6cc2d855327eb0080da042a87634385509'),
-      (264, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bcd6e574ae4a833b90eb63476c17d808b7860bccf14610e9b34258dba2aecb7e'),
-      (264, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '0dd56df8f8a61cff2a42a7e7eea46a4e380afc04623a9e6ef922637dbaed7eed'),
-      (264, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5d5c91c38ee9b7d95087e8882f3b282bd87eacd6d8460a33b0e7e75a00a979d0'),
-      (265, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cdbfa71fd16c8dcd767b5649cd528b7edbf9570fc2c14a87dfc08b61c4946cb1'),
-      (265, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ba6fec0c2c5893f629adc787ce1e978323f74337c729acf8a77889f9ce8efe09'),
-      (265, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '587567df32922b7828029109474659a535741391673ee19f8cfc11d902f3b302'),
-      (266, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '49eb30630690d8a67fe10589e79085bbb9ade400c6ded39ad824289e24124aa3'),
-      (266, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '941a8a6d84aff6688b5cd35fc6967f5cc3cbcb8771b5ff4ee5398a2756c08e03'),
-      (266, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '6c2dc3472127f2259b095ee2dc86b04ac3695d6bd3ade367db4b06d78e9a3e27'),
-      (266, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (267, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9c9eb5a0e0eb75a62fcea8b4fc58100ef856fe9827e333905f0f1fd1cf21a55c'),
-      (267, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'abb57cfd8324c24fd35c8a66b3e4f9098a46a1fcf0b2fc9b9c6ebd6068265a77'),
-      (267, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9c9eb5a0e0eb75a62fcea8b4fc58100ef856fe9827e333905f0f1fd1cf21a55c'),
-      (268, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '66e6a271c75e44f08530db8645d4681518bc0457b1ad2166a88bc857548a660f'),
-      (268, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '875b29820b9df76e0c3d8795b90fbfe88fef7d95e62b6e655778398acd79fd2c'),
-      (268, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3c73fa88dba0de730aa3ffc4b196f27e8eac82b13f3d3eb00b3b9b57267df745'),
-      (269, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e93ee958d67b854504a4cfc73b7e0e943da118e7d26e1b27c247727de5fb3657'),
-      (269, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '566724012ff1a9526666fe342cf4d5bdce6c4198d681639bca63c3bf8371f8d6'),
-      (269, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b31b2331a9b8b9c6c5082b530534eff0d600e5f949c3354aa892b233d2db8c11'),
-      (270, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '567f4823a75af5399c9f89da345306302e6919f7be8f9a067eef1e08655f17d9'),
-      (270, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '117d75425b6a12c2e11915be392861dda30d74c2fac50a85ae783c0e38e85ba6'),
-      (270, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'a4878cc1a461e73d17e7f16c92573ede8aea5c6f9bdc79b6b5a0d69d4139fc50'),
-      (271, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd40c4af497578d734b603e663e83255612f76ba5dd78bfc60b134fc3e4829a0c'),
-      (271, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e4ef5a8c536efb486cd4585e51a9f5f299b9c6c2d889179d57cd273ebcd98489'),
-      (271, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd40c4af497578d734b603e663e83255612f76ba5dd78bfc60b134fc3e4829a0c'),
-      (272, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '85bd554d05f1a33cebe3e72d5f1037b221391bcc89c2e1e83ef87c2846f9c7ef'),
-      (272, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd55799f1b1afd5c073ce6ad110fdcf992d2d0c32cfdbdee153fcdd515100f2a1'),
-      (272, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9bde025e79fa9698f504f27e9a25e1c8934108907bbefd00a612174ceb023a63'),
-      (273, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '990fa2bd7617fdb038af4598698497ae4e59b6d0237398e91ca8e4727e2f8a5f'),
-      (273, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'edc498d5815d5c7aefedf435174791ff5c28225c9538006177877329a756b6bb'),
-      (273, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ce2c01b60087a9441aa01ff4af4748136681f3101e844bf85b8bce85387ff6fa'),
-      (273, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (274, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5862c50cde26ba62d403b7f4d3a1f9169fdf22f28b05ac3aef731a4ed0aab9fd'),
-      (274, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '1d0ccc1c0f2c98be51e3481b8ab48d252881e8ffbbf7e958ee34eb44c7265db8'),
-      (274, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '3816a2c6a4e7e61d1662ddac3d3cacba7fdd95771ec63dbe3518655c830ce4ba'),
-      (275, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'da5fdf83e4553bf1c79efcfbe1b7af626fdf7aef91103f7ae0a1fd6cfc78eda6'),
-      (275, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f548d464d77b89f4dcfb570fdb8418c1bec562861273749e01e9ca22c0f30d3c'),
-      (275, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'da5fdf83e4553bf1c79efcfbe1b7af626fdf7aef91103f7ae0a1fd6cfc78eda6'),
-      (276, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2002fee10a115c84d2a40c582bca81806bfb207736f6d8cfa4722c527820f181'),
-      (276, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '0ec84e09726543677bea49b6a93a9c645b13304eea6229e11cfa30d75c34b3e8'),
-      (276, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '65715bc93d2e40eda798378641ec3affdeb3ddb100540c3cce66ae62c7aed415'),
-      (277, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '446f49b9f456b4862e3c783fea59f10d5a9ee752c141f308cafb5bdd7089d263'),
-      (277, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '4cb52e7b2daa19c437431d91723a2c0a781de327afac638c7989292a7ccd2064'),
-      (277, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e3feecd0cc839f4fa506cf1dc1f7c18bcef372be5bdf0c48745b62c2e1f6ace2'),
-      (278, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5987a3ea33fc2b5d898e41eca9a9ccbd102d976f2c082ec3706956c88dfcde09'),
-      (278, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '0783818df67428d813c90d45afb8741b8f221e6c149c528f784cc65fccf36d7e'),
-      (278, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '67fc4ca8d4e480293a48643ed6be44262e32f1cda151b088a8da13929642f9b0'),
-      (279, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cec29598e6c76332651b01aecf5960aef0864d6e262db5450d7e057b073b0fbf'),
-      (279, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', 'da996a76eaee4a55641a3b2c73dd5a71556cf0e02f84bcc6d23796b77f0b91ee'),
-      (279, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'cec29598e6c76332651b01aecf5960aef0864d6e262db5450d7e057b073b0fbf'),
-      (280, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f3c029fcf758d13cb7eaf03afc41f6c759c950bf17f6faac6ddfbe0ab9a1a2a7'),
-      (280, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '0b6d202742f09043c0ee9bf1a1eca9b1021d4ccb5bbab44e39d07ea37693faec'),
-      (280, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '823cd4890c70c99aa7595c52b25bd306d793e731d83395b98dd983e2295fb95f'),
-      (280, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (281, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '397d938c14bdf1445abb1f8a0a0e472e0035b230b20ad66c182fd26cee035c9a'),
-      (281, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fbce5c47cf93c8e23c85a3b6178bd2465353fdeb476d4288153efda98374d3b5'),
-      (281, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e0fc3ddb838e4efa159c67ff1a0693858aa19de7b698ac1550b7f483e73616d0'),
-      (282, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0ce1a3de99a72affe510f62134a2cb7f5ae314248adee7ba3126e4dd3b9b6131'),
-      (282, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e51e26142f1a0cb71d35c082da544fa851f28006ef26bad70679a8d534c63102'),
-      (282, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '3e13851de5548d755c746ecfd1a68bd6bf2bbcd5fc387ff21f7c5cf0d3b79070'),
-      (283, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '16d93cc5bbc4c7e4fec366332e7e602e8768477c4c0a7432222e238dc24ca306'),
-      (283, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '7f719bd3771038f97ac7c4fc3ddfaa9fe5577e53ad4d51bd53a14c950a6d71f4'),
-      (283, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '16d93cc5bbc4c7e4fec366332e7e602e8768477c4c0a7432222e238dc24ca306'),
-      (284, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3275ce4bc2e429e57743c97d210a2d58c019bd3ec4acdcf91f8b84e87d04516b'),
-      (284, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'af44e5beae2c63cb9b5e975f075bfacc524b10a21e93abe74d95bdb8fe2ed0a1'),
-      (284, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7527adc674568cc7b804509ffd3baa64756fcd77f71b84b8f3cea12b82ccee61'),
-      (285, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '53339b026517aba14f0cd06a033a20195fd7c4efc9c7ee4f1a6c551b4af3917e'),
-      (285, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '2c464f86dfd775c564c1fbc2d4ad23858088874976812dd51eb121a00f946f0d'),
-      (285, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5d18f47573854c9a082c42521431e1b017e199281f10e4546765b856d7af2988'),
-      (286, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '431d83bc4ea99b82b94542e02b744d3917143bbc9d96cdd71a17768fa81249a2'),
-      (286, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '5d1b7e2f8337135a5359f751396ce28c8375486ff0188fa566a777d9952a8d15'),
-      (286, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'e68ca6f7790371a3d94c9b985c0cfe5e1d756fe145e2e8775afd3cb3c2911711'),
-      (287, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '52d50a455fb48abed8187795a11e4871b73ec6a220ab735fd7bd32d458523522'),
-      (287, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '757156c133cd52b0c4d8ba67ae10af669524971ad3f794d13b90a2f702112c6f'),
-      (287, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '52d50a455fb48abed8187795a11e4871b73ec6a220ab735fd7bd32d458523522'),
-      (287, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (288, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7011f79352b7bf4ee566a24799709bbdbce5250a66eac8b3b24f23a6409f5326'),
-      (288, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b63caa22aa065a2a6e1d62a76674fad13b6a2811fb6b5c813f856e1e5bb1e87d'),
-      (288, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7c2dbc670aecff0c20fd3fd9a33a3fc11c5707abf8f199693201b810477d77dc'),
-      (289, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fe30599b4a6402e77c55328b7f0ae95127c7f7188ca3bac58cead59e61a83ede'),
-      (289, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a46a09b3ada15d75ea3cb8d5d4da346ec86f71c3f5284419dc32636a376bb7e9'),
-      (289, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3a1164a825606b2028840a9b81c77cd578f93fb06b8c6cba438faff37927c14c'),
-      (290, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dafbd8e3d013b00f2e29ed094c4aabedbdac848f1c3796bac3ae7141795d2ecc'),
-      (290, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f763629058403810f514003ed16c78f2a171fec84b8c97304c95438b2156b8a7'),
-      (290, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'cd00e292c5970d3c5e2f0ffa5171e555bc46bfc4faddfb4a418b6840b86e79a3'),
-      (291, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8fddefa78b51b39ef06448229f773456c4f38a66289d1a0d16e47e00bd20efe'),
-      (291, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '95d3db1fc6ab139e715b5cb6f21b312375e07043d314fc0c1e826a7446e1ba4d'),
-      (291, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'e8fddefa78b51b39ef06448229f773456c4f38a66289d1a0d16e47e00bd20efe'),
-      (292, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e5ae151e2a1b06491617767dce8a4431f566880a608abaa560ccbe476b6fc942'),
-      (292, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '3bff51b2741a971a34c4069b24adced88f1489cb2360849fa82993751b61df74'),
-      (292, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a25a31ae969c0ad1349b28cca2d30431dda4a3123350d834f3142c3447de0b18'),
-      (293, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f9af5bcfffe48eecd987b3b8b697434ac7fd7516296641ae45a9d44a7bdd2871'),
-      (293, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a667521054e1648b13702027c56ec00aeb08385feda31a38bd1823bc0704fd8b'),
-      (293, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ba125a000ca7c42906c8b4538b06ce73dd88102eedc3ca07a8080df8d723c182'),
-      (294, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a9fd1330b5f9a8d8cb8ef432778c61c37084449335f1cb65ff949dc24cb87791'),
-      (294, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '3ad07b0381791081367508b6281dc1d873b93a6f0077386dd2b59e4bb1e18989'),
-      (294, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'c5b06100796e6b03102e63a77fe40a69443ba6cac8ea2c4f31eed528e850cdef'),
-      (294, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (295, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '819be95d04e04eb62fbe5c35e35519aa97ba522625e223f7b3889506d5ed8810'),
-      (295, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '66be4495dfd32e1d821d66931f9bcba07fc6735333d99e946e43fbaa067e4e8a'),
-      (295, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '819be95d04e04eb62fbe5c35e35519aa97ba522625e223f7b3889506d5ed8810'),
-      (296, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '70cea611b955b66788dc05b5e168708d3bf3842200039443b5879eadde738ba7'),
-      (296, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '9fcfc3e010510cc02d41b2038df8998676e2ec685b015ae366a604e55cfadf6c'),
-      (296, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '087a96a122f2a9b164d82b8d7ea3d13df98f3a2d54427cd233fb7f75ebbdc628'),
-      (297, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'af0372acff866ffedb16e041be950d2ccf157d67398495d215c9acf0e7eaf777'),
-      (297, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a11b8810caa8d565e049425bcd48526379f7db2ff3b8e5a2b0dc84b686698a0f'),
-      (297, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1977233648d84a00b2c81253168a1763937e8d83ff6ebab01004405cfc553e34'),
-      (298, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '82eb0f34c2f4d389701a272abc70b6859a0884e12596ab35521f63159a6f8463'),
-      (298, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '9b0a8fbcc8267a9a682a9818d7eae1b68d0becaaa394687e9efa134238106c36'),
-      (298, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '7119f314d3837dac54bf984118de657f6f1e6dfd2a2b2a20510454f762dddf11'),
-      (299, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0dedfd81e9aa0d06dbdd6a2b52683631d2767c9c545243f4fe63e79f23909dfc'),
-      (299, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'aa56fd138dfd6bccf2086915023e4d859c66f74618665d8cc5470a8c62dbee4f'),
-      (299, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '0dedfd81e9aa0d06dbdd6a2b52683631d2767c9c545243f4fe63e79f23909dfc'),
-      (300, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '110a3d7805b4ab35eeb6e6c44b5f8f8387c9129e8f62346b0166c3114a759c66'),
-      (300, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '65af9a4edff6345c8a150ec985d50a15b2d587c9708cd57d2697686d34be5242'),
-      (300, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f1a33115f3848a465df2d7b1d7e48355cc56f0d6bc52fbaad40928383eb6c894'),
-      (301, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1340952368573c39540befff9429ef5bb78aa610f9fce41768b302139d5c5585'),
-      (301, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '0c3e822e3f8d75b09253b8c23c03d912c35ead3dbfeacf91d23f471b32920613'),
-      (301, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'fe45ab8978a9ca929f31375aa7e14116e8547e06768be6f8f52d7b4c3fff5b28'),
-      (301, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (302, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c7ec1fcfc560764b15aa834859e4290b743124c0924cc08f3dcfe87b471b0f78'),
-      (302, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '83b0f982f8b69046626e4d01af0ec43fd9fa534c262adc7e22254f04da13a3b1'),
-      (302, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'c9fb665dfeb2e169ce401371ebc5b7ee04586e1e447c1c2549e0fc29da7d3be0'),
-      (303, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '441a269d97a4f50c993e5a62d1d6257b28ab3710dfee7f5d80ee3e84d5570451'),
-      (303, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '0fdc73733b95f0c4fa50927feb475f489ec39fa183aba65a90637536badbb7dc'),
-      (303, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '441a269d97a4f50c993e5a62d1d6257b28ab3710dfee7f5d80ee3e84d5570451'),
-      (304, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9226da60fd1ccc7981af739a533f455f5b9a71e50fb684fb80c9bcca96711df3'),
-      (304, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ae0cf5cb04919a2491caa744c4b50f09853fcab60dc2b84538e9fe87bf1e4e1b'),
-      (304, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2b72c36094cdc32182735952f33f8fc5089d0187c53788a0d901b9dfd30afbc6'),
-      (305, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9ef4e36baf7640bb1d62fbba2a515693356a86a12c9274cd4b49651f02b5dbd5'),
-      (305, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd7e95977cf8f7c085393dd2b33d8d667bd3b51e2ee435e8c764749d89c246d97'),
-      (305, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5edc9a8a01712e757303575297a58f4faebb82e742f099a1b9b4b85c31109e27'),
-      (306, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e12fe983f03e090199d0adb28f8ed36c009add9dc1d48634e56c0e66b47f05af'),
-      (306, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ac4dd36deec3a77b0f8d4c7295132cae44ff2d562cad9feab562fddebe88db76'),
-      (306, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'bc191b056401eb4232045937c11c2c474a33c9be2bfa19541d27f556c6a1d1a0'),
-      (307, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '99c5f84f6010346ff23d570f8071bb47e75b602a84cb4e5a9a82f58852e2b7fe'),
-      (307, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '6d7f3f6b4eedb487afa9aa708c1cfc35850657c88735c9300c4d132e4c469b1b'),
-      (307, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '99c5f84f6010346ff23d570f8071bb47e75b602a84cb4e5a9a82f58852e2b7fe'),
-      (308, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b574a285ff90f028acf554be28b4f496a2354590d3fe756cdf91167a3443385c'),
-      (308, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '4eae3000de4d24888ac89d8d7b55beeba0387c54d1eb420673727048844b7b88'),
-      (308, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5a48c563d9b7adb875fb9d647855596405659a4f61f07b0142caf4e5639df24a'),
-      (308, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (309, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2e3845d7adca70f47079d383442d0256bb842ecbe8eabe4929b98338269e45c4'),
-      (309, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ff1c2598e04ca12d8cb2d1e1374f5bd0592234d80574bc4a0b55364719d59255'),
-      (309, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e2cc7a26b86841a048d75f28d75ee9677e20fe0643e7d5dcca851096702d320a'),
-      (310, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '09eda8a0f7716a1dcc83ecd23f96ff149c1d58599d2b3372ca5093a67982c6ad'),
-      (310, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '7ce787eced7f1f5839deef41a4325aa3986e4c2fa388836f724ef990ad21a27f'),
-      (310, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'eb2cc398593ac59fbb5d7e86ee1b9edd0e597f332a0022886c9fed667b61aa42'),
-      (311, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '834a033d3064818329ebb001c854c31b5f20c07b01ddcea9a5d5ddb6fa73b616'),
-      (311, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f13464b4f5705a90df5d2eb06354e37593e91661c9d96b5dadb538b6c3a20c70'),
-      (311, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '834a033d3064818329ebb001c854c31b5f20c07b01ddcea9a5d5ddb6fa73b616'),
-      (312, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dbf98afaead47c8dfb6ec215321d91b2de095724b4cbfcbef6d43ae394508189'),
-      (312, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ebb5f0939cce8cf3c8a60ff633e83c704d75645e22d975ec7b7ad3d73d325529'),
-      (312, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '020e463bbc5968c342a573ad24ecf0a7798898d4bebef9d4c96e8abee62796a1'),
-      (313, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f03bba541e9c661f67d84e37bbffe186296de9aa28fe5575e24756497389f36c'),
-      (313, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f35937bc8ce1a1a13996ed1ab937b37b194c824aa0d656b794abf35a4f86f79c'),
-      (313, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6fac12d6bd9270e25bb065332e3e063e2d848e0e7db51314be8e5a069e6472e3'),
-      (314, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a5386dcdb5ab34bf9484dc63da57ea1ddeb894f9b909c0e9443a37a08ff540db'),
-      (314, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e5bdbb14664d27cf3ea722e0352115d071ff2065c75493b34bd0a447a46214a0'),
-      (314, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '30ba3b2d1d23df7689e276dab7de418973d08e2e9cd69bd0dfa0fa4c9a87d596'),
-      (315, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '51f5bc4247948e2999bed1d83c5415570fa78dd45eca0a42eed09af1c95ccd37'),
-      (315, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '8f93cc8e6ee8eff8acf743be9a1699dfa563218b0be44d1b6428b339ea98c2aa'),
-      (315, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '51f5bc4247948e2999bed1d83c5415570fa78dd45eca0a42eed09af1c95ccd37'),
-      (315, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (316, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9ffad41e1ccb02c51bf32c98efe7ed78b2b4f7f0a9bf62f43d365d81ccc05f57'),
-      (316, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '022facc35dc29ef5ff16aeddb4a5397a79d0544e34ef4b927a63fb19be607ca4'),
-      (316, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e7dd0c2e239006704c7ea6a04c6cd96378fa3fd637e152eee9f2a0e25535e3b8'),
-      (317, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd30b60239c980beee402434152c2727127677ee296935bddd12352a7e1c0b493'),
-      (317, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd8dfc424424978b5606a005257b236f6fff443df4f34a39e132e404b97b146e4'),
-      (317, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5c2f7bf4df6a69323ca06f9c59e13f4296037ccae790a99bddfd634051edb1da'),
-      (318, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e65e5b0a129a22d98fa4c5496f77d5b284943b65a0bf16d2a722927020ff18a6'),
-      (318, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '03e684a9155a968e63a60d907b428d263b080a7027624295057f76c6812a9801'),
-      (318, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '716ed4cf0b839335c2c8beca54216bcfcde08b38f20cf7b415e6a0a7abf928da'),
-      (319, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'eb5521f29f8bd5fa8fbbac41b51cfb3ebeb35f23ce101601f5af96e6c1665722'),
-      (319, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cd2f8c0a23c6e58be2c35da4e1b79355ef670cde1e5e253002d2887f7fd19217'),
-      (319, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'eb5521f29f8bd5fa8fbbac41b51cfb3ebeb35f23ce101601f5af96e6c1665722'),
-      (320, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9c95ac5939cefa20f28e82b6e59c1cf6bd2766e4c8905777c32a87aad8924db8'),
-      (320, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '79f216c2e7c29c7751e53d1e1c16f9481cc8e7446a4e70a19fa073a5e8804680'),
-      (320, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a6386c02eb312a697a4e690a84903e133cce3456d7989bd0a6d7036d5a75c1f9'),
-      (321, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b2115b027ec7726643180841565b6eab625e43005fc079421a9eb858a336bc74'),
-      (321, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '90c70e1d438137658fe0a59f5725986062e10cfe2be6bfd00633b9ee734bd629'),
-      (321, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '645866dab3bb7c7500d93738cec839430ec1d697b099f2d560cb2b4017bc2159'),
-      (322, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9a2c8cf0c7d1195265a848dd9ce9cf8faa2dbf0caf9d1cc3bf60bf889b720b84'),
-      (322, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '763b3feb85fdfebe89e0e10d55a19d2e9a646751068adb622d07db3ccc65c6f5'),
-      (322, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '7fd37128dc4e13137641de045a83be443a4f83e8dd2bc0290dd86409b16e13a4'),
-      (322, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (323, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '56a0029cb6285907ad446b7477e93f2340632048e4cc9d5d11718c7931489a6a'),
-      (323, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c26dc53957f1befcb3962e433e5952a0b1b479105346e202fff2e3b14f59d1cd'),
-      (323, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '56a0029cb6285907ad446b7477e93f2340632048e4cc9d5d11718c7931489a6a'),
-      (324, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dd361743174a882f95c79d3ad4e6ae17c34ab27f545437a938450fa6d7886bc6'),
-      (324, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fef854013c93f85e025fddcfa4325d4dc82ff5de55f27b2657f882bbbe2f49b3'),
-      (324, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '345ee11df72423d2249c1f4ca140574272884e26525d377f8d0ae28af13308ff'),
-      (325, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a98406719ab1bc8fa86bae5638ca217770f78605783d102a37649f8363b8845e'),
-      (325, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '2db5aae1a77fd65d879dda91e1dd915465ea91905eeb9677fcc097a26e1d5169'),
-      (325, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '59fb8ff7f233c02b802b44d9d94f8a04d1326a397a4c823213f584593b6d166b'),
-      (326, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b8d9e5ea40d83b5d5ca736bbcc20512108c15454d71331c461aecb0699542b75'),
-      (326, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '3f395c6074d21dd6b78a9cbcc823c053450566f36e485d654344aafbc823e1e5'),
-      (326, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'ea2527877ad4b231a0ebbf060cb7016f1722baf257ce6b61078cec3adc04af70'),
-      (327, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b8101f5924027314825919234bd0caaa8640eafb235756e9e36faab1588c9b83'),
-      (327, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '074eede195189cceacfed319ab4ff25cb77dbf026d92da72c21872d884fad3fd'),
-      (327, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'b8101f5924027314825919234bd0caaa8640eafb235756e9e36faab1588c9b83'),
-      (328, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1655bf2a75586bf1a26fb3d023ce805810f275a7517e05861eea335232345ece'),
-      (328, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '498873282328ff447b1931366d73fd4f7e59d67a2b2f89ddbe97138b8e182183'),
-      (328, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f7b3ad1146ed318d0c35057bf4f1f34fe2f783522c03d1ff9843f0803e9aa07f'),
-      (329, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1bcf9f660aa24f24c1534b3550094051427b57dc72b983eb78e5826d08a7be81'),
-      (329, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'aabf8664da321c5d38864a64e811eecf43b8c497623d7dd4b7ff9454732fb10e'),
-      (329, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2b7b33a024ed86305f34d22f2e3369e9f6fdcc4735e1d5f4b4ec407e070cc5ec'),
-      (329, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (330, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '83387ad7d65c7f0373dd4c2c5fa0ba8d861e789557097d11e19ced13b88eb466'),
-      (330, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '0032a13438951592a3020db463a72e5b74bc019596c4055a97bfca40af7b67b9'),
-      (330, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'fa807c957eafe34b850cb453a096df2e5899f0902a837fccd59f9aafa869fb44'),
-      (331, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6942a46262230fd9f927d93ce176b8355df67c0daeb1aeea72c846bb8823c5d1'),
-      (331, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e6e73da3b0c67a0c231e0ab7905ad0dfc54b9c3d9d7321ef74daa432cfb3f156'),
-      (331, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '6942a46262230fd9f927d93ce176b8355df67c0daeb1aeea72c846bb8823c5d1'),
-      (332, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8d2e4e3b375d61fa130d460f7e8de1e677b0abab6a4760e30a33761ef5aa04e'),
-      (332, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '19303107d1be0093fbba11755619801fb38d87736934fd58efdcc536df2d704c'),
-      (332, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4a0723c57ca359c18c7fc3231b96a750c31df81b9188cc5975a7e8733fd6a6e5'),
-      (333, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '64ebc6d89ad921a797e1a024210214c92bdf99ae5069baa1ff85a706df39e476'),
-      (333, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ccaccafd1e033264de006a926de4b795a6fd4bb7c27dfc6d675d43ef837b425a'),
-      (333, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'fdbdfff9d6fc905071163b652496c5421753e5ad3164a4c570c052284c31db5e'),
-      (334, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'c9e4e4139b989e31dbbe9b96fdff13d77f05cbed7fea74b27ea407a627c2e999'),
-      (334, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd168e7da86f0689ff8d3c8ff1c508bcd92bf9901ab93b494ffe536eb9614b01c'),
-      (334, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'cce595dc28b5639da2cb4e618ec7bfb88c6c40afc8429ef77febbdce4d6084c5'),
-      (335, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'eb0d1726c790dae8b7151bb06bd00c567c1d888c3a475b7278ed18c49b87ff5a'),
-      (335, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd0ca43b6a601b89f9457c60008a1836cde03cf76eaf6eb0656c5229d7b8496f7'),
-      (335, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'eb0d1726c790dae8b7151bb06bd00c567c1d888c3a475b7278ed18c49b87ff5a'),
-      (336, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ea2ee2b6b2b3fae15dcf6af87ee4811324aac7ed355103a82dfac068129cfc3c'),
-      (336, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b0c8faf9027feaff9300fb6a1c97a4a50feaf5e4a2740b6a83cec139753c48ea'),
-      (336, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6e18fde04b4f4933c1fe82d4a94f1da78c7fb7ecea9ad438ee13c614594908fc'),
-      (336, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (337, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9408a11664f75e5af416acc070191213043227a7973a6ce1c56087da233fe5d7'),
-      (337, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bce543c37a074b4b084aebd5987c8a22ee3c677d50afda22a3d367f82783b33d'),
-      (337, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7f51a155895c4706f2fcb6d3dbd809f252f37c2c62cd4ce32b2ee57893d65fc7'),
-      (338, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bed0765d60660d58312b6cc7722b8832b622c382ef3a5a506cf0c69a57a300ee'),
-      (338, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cb6b7e6dffe65ec9d55b0855821ad25969cab1521d962409a4ca638f1e97ee36'),
-      (338, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '1a68809b446d446443c5e3090f98875615839843cd48f06b2f6c8749e0d9fc68'),
-      (339, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '81edd7ab52d267062d170487c6423fa5d9cc69124da68e180c46745b41b75a58'),
-      (339, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '66f408e16e8212b6d5fcca03b39f3c97c70a7718901b1c175c49e627d7c29c14'),
-      (339, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '81edd7ab52d267062d170487c6423fa5d9cc69124da68e180c46745b41b75a58'),
-      (340, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '10613f11fc6c076cb53f8f25dfd5f3a5c971956f0473d06796134c882310ee9e'),
-      (340, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '8c861bbd5b06827768e6f421a7b49aab9674c9282e4d35ddd9010da8ba129748'),
-      (340, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '1d05edbca67c677cde1e103b563510ccc0e681014d30254dcb6ae81d924b6ea7'),
-      (341, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '60486b70f9073faacbe3ab14b58f3e65430e910b7c38d9f8331ffed794763311'),
-      (341, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '11997fae284a2d0addbce4d427f836426246090920aaa21b3af76b8d389273fa'),
-      (341, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '87a7622900f3332a92c348d2bba2e0804782eee4350e4c9002702113a481d11a'),
-      (342, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f52501a6787bca82d6cc98ee56ce814fc9d3621dcf18bc87af783bb8ab5f0e07'),
-      (342, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b220cf0a99e4711c0460629368320864f039a4effb3ae57101abd1b9417d3a2f'),
-      (342, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'de1da8f3791deb5ea5a11c9a67179b1e240aa14979524a3cc28add0e3612c0fe'),
-      (343, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2e6311953c1c341c56b124100d04e09692bb22c976439efb109b3d3ae08ee9e5'),
-      (343, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '5fa3ce297b7641ae77b0580e90f7e742baf9b0a2c592243bf232220371825037'),
-      (343, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '2e6311953c1c341c56b124100d04e09692bb22c976439efb109b3d3ae08ee9e5'),
-      (343, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (344, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'be42965af64f443a10564122fa96ca45899f9ab0975a9ea74d6ba91dfb90aa7b'),
-      (344, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a66d143b9c514c51ead60524f6b921ee2f15488e35d1bf2d1b6eb078ad49a837'),
-      (344, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5f971f59a9d9e0373796c3dd45bf668ec14c17a755a7cb7d7c7f01418de6e13f'),
-      (345, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e6c293d050de0b5363edad7bf81c4197d0c384bd3bd2a66624ea8c44768b9dd7'),
-      (345, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '745cc9225bf41aeee1a0ef9b30ff4b410c84b9de67dc0e5f4941415944a90eae'),
-      (345, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4abe1615262f80e2b0424b450d8827c56122caebc5d1a5cbb5c4fa1540d47d25'),
-      (346, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1810e11e9fa073515dfd4a8e0ae94acb8694c5fd85731707a70896659f25c2bc'),
-      (346, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'bac18e3c009c1693a21b449cba5ae17ad13ee780b23c9deba091ff9f2a279afe'),
-      (346, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '3fea5eb037f38bcdad693ba4ca4c9b7718fd078a53c711a322f90394c493c466'),
-      (347, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '33ccea1e195825a6e6c8ff7d2f3c848bed8178947943e3aec193c7c2bec18e13'),
-      (347, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'da594ae0d30a20b65b0841d83425bb785c685cc9a96e695ed9a3b5c1fe1d338f'),
-      (347, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '33ccea1e195825a6e6c8ff7d2f3c848bed8178947943e3aec193c7c2bec18e13'),
-      (348, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '11133edaedaf33a680227e1b602f4e0bd8418f4147d56f4adc6459a85017b568'),
-      (348, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd6b3845477d599647fabd28fab8c6d1d6577c634fa6bba736dbc46f1deebe3e6'),
-      (348, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '91655294c42170279784a272e8b1008eb180d3a86786c1e1c061f7998a95e295'),
-      (349, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b54157cf1b2eca63b0284ae5c95f8987551db3349111baf9d87c545a37b2bc2f'),
-      (349, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '2c7508021300a1ddac5af48eeb50d927e17a9498893ce5158f8f67159ae9f1fc'),
-      (349, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '383fa61f6b8a443dacb151784ef6aa2fe8a52670ee1b97b35ad923dc3b9e99ee'),
-      (350, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a6cadf911758bc5c50c58abd4cc7709082806b987831938865eeefdc24684a68'),
-      (350, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '5ca05c454491c2dbc5d3c34ae317e445838c37c6e7fa86ad261d1940a5709d5b'),
-      (350, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '8fdd07d5030cc7e1051310ed8cf45f5235c3b9e8e214bf7d6e0072faa2a3b153'),
-      (350, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (351, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '47cd8939cca458dbee0ccdd3551a0ef4ab4826207958138eed67d921d1c06dd8'),
-      (351, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '8698026159c894740c4afc64490ea07ea38791e9fd48eec7e452e4070158c9e0'),
-      (351, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '47cd8939cca458dbee0ccdd3551a0ef4ab4826207958138eed67d921d1c06dd8'),
-      (352, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '92ebcfed613d51252e62a6acd05f9d1bdb0baf0724631bc56164e829ea76bde0'),
-      (352, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b13283464f22bff7e8bc1f96fefdc837a8b79195d820a42b84244f046580c05f'),
-      (352, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'dcd3efeaa9ae364a2668fd01ae5daa57f38974a6739243919c03d55412ebfaf5'),
-      (353, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '550f0da2a0535d0b47c53ba88a0bb40c4fabf7cd9815c53b44eefb12f0fecaf7'),
-      (353, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '86e44ecab748ebd23cde177191f3c4c911230e383b761233cfb5d70f93083024'),
-      (353, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2a9980b130c9c2a36ccc14958e053facc13a8afe9a4e13db2eb5b7b61fa24975'),
-      (354, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a6a6aeb16ea00c031bb04e5388aa0398567c853bc809f03506369eabf4d77773'),
-      (354, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '9802776669d566c66342c8e76379e2e36b5476fdcd73163ef3c97343339e7d3e'),
-      (354, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '9c0095c04ef53d9df41602f3783c90ef3c3e27cc9d0b38262d23930db6313f5a'),
-      (355, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '149c6105a1d4bc77443237164dfb507225ae3263af75df6b3b4f224f1c84d919'),
-      (355, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd46cd682e41a223640809a6df075eb2fc0bae463158d4e77b88b10f2f87fce4d'),
-      (355, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '149c6105a1d4bc77443237164dfb507225ae3263af75df6b3b4f224f1c84d919'),
-      (356, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8226a8a80a9ae99eca06c5a1f2231b92ef36b0d030eddef379d4d6bffaafae4'),
-      (356, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f636e6f7bfc86e6ac87918e7e06f224a4b783c65f99f2be65f2e1da123bdd9de'),
-      (356, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '59a6853cb4f0c884f66816a2f49aa3f998e955b2677869b00cb136e3f4673d91'),
-      (357, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7479a263a0a29211ca0de79dfd5667bdfa9f02863830bc0c7fba899843d58973'),
-      (357, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '782b8be51ec80fae1671abf9d7528ba619d6f9b85135ca7f619217127af31418'),
-      (357, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9c382f4f3f6d4294f71795b8046229d82b7ae71c115c1c2f1b8fb4cc806966c2'),
-      (357, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (358, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a16154a50808a27db4b342b306f7328f295122163b77e02ebbd4270bf2d5ef16'),
-      (358, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd582e13bcbd41c89604056ae842f03328b6687f5860fcf920773fc131935fd22'),
-      (358, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'e86df0947bec81b6687c25fcd93406608c2c26a4b7caa6a29dceea83fdda2502'),
-      (359, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5e60220dd736951049206aef2fac93e789163cb35d3d664a4396353adcbe70ca'),
-      (359, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a77f7a876bc679bb9f2dbeeb08eed56ea64702ac525aa1296c815a1fef08588b'),
-      (359, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '5e60220dd736951049206aef2fac93e789163cb35d3d664a4396353adcbe70ca'),
-      (360, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '93710b35570582bf70b0a13ed5e0e98f10bd4e1ed8f10738f93a214417b4656a'),
-      (360, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '8e22d889899655270f6032fc8b38fb2d1d3bfb0b3bb55efd62fb2f74c9e66159'),
-      (360, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'dd82fe700601e66bcfd0fbdf43e8582980b9079303c24cfa4b4ef2925bfdffaa'),
-      (361, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '418522117ab3394f9606128d7de492b80a7416adc0af5b484b9a4dbe2f03e992'),
-      (361, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', 'df3dd3ee3162774bfa9ad9719a1be8eaf1c40611ce70df2028516e8ffcd543ea'),
-      (361, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', '93156330ce0466e50174a27578bbd8efc92a5bdc6561fc0cc98d2b40e795bd9f'),
-      (362, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '44612b4b02372f3d32acda04000e115eeb0cb940a998e43b75a4bf8ced13bf50'),
-      (362, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '288c1f18ad8a01c1001ed4662901d5d9f66aa4d92ad2f236e3f10ccc61d8bf08'),
-      (362, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'aacf55d20494322e583bd0ac2403198663644c3fdf48497bac01db8cfb12864d'),
-      (363, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4f2d5335509a538b26d71f09d4f73e1dde785070de1a8d92359b299d37d4f9fb'),
-      (363, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '8a7e06aa3aa8a95deed3db7922a1b49ba60d7c750fa5ab6a0e31652d497cb315'),
-      (363, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4f2d5335509a538b26d71f09d4f73e1dde785070de1a8d92359b299d37d4f9fb'),
-      (364, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8fac8e2fb3f52c33481c3cdfc2cd622c39ee7426fdc28a39a63f0782cc57dc6b'),
-      (364, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'cddd53f4361524c4af29475d871adb806f4836b10c4b16e3e3836745e476733d'),
-      (364, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'afbba9e8944b90053c608c27a2c693cfb7521c0e3dc0d130ede1c78c682bdd45'),
-      (364, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (365, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '11834eed5378d125c3f333d9f54aaeb095a515f49878c7acb7ffe6e9f800231e'),
-      (365, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '51edb219a5b81dc71f5e8de7b3f081d102718e1f4d673f1972a6e5bf5170ed68'),
-      (365, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '70104a4a9d9867b768dda0c41051e6fbbbe40df64da7a4d717d92a272623aca0'),
-      (366, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a60558a60767b88ca29291b746a2489b479415dfe93f680331e2c2fd2296357e'),
-      (366, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dbdfd7a4fbbdbf789e8ce51790266cd301ba004fe33898882e519030fade605b'),
-      (366, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '7e6f4df4aa049e9bcbcd9ba9ee7bce7a07208f9cb437bbb1e7f45163af84fc51'),
-      (367, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '658e2f3c98596f6ce633f48289a68ce5ab0ebe88eb967e69696515acc989e320'),
-      (367, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ea8ef79b1181b3acec86a4edcc66cdb23db7f00838436bc38fdb4963de9a7b60'),
-      (367, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '658e2f3c98596f6ce633f48289a68ce5ab0ebe88eb967e69696515acc989e320'),
-      (368, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f699fb6670a5ef15faabb9b4d01aaa0595237e1231ef0a127b2ae85824d39195'),
-      (368, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f9f96bf7f93b5a3d61c6560691deceda8638c74469b3be45223f75bf57b51c81'),
-      (368, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6b91f0ada11c4356c6fa49ddfb7682b365b1f5b9cbbdb525950e24fbc9663d93'),
-      (369, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '28a1625cb54f00255b5940d7ff7b13102616b19a74962336c460db4eef522d18'),
-      (369, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '61cfd1222b9e9be9355acf8378a989ad1e5af22358d653c13d5c505e1246c022'),
-      (369, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f300cd8482d842072ee3f5673c33568698aac93ea65b6ede6b7539b811d49698'),
-      (370, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '791cbbef61deda5d340f573e86f439e211cb47b6d03d060833fe08247db8840a'),
-      (370, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e291ad4eedbc5d2db6a5386aa65cd3fc4ffaaff35fb0db2ceb98e9c302c8e183'),
-      (370, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '98f5daa490f93db7d4c981ba5557d9ecf8a9ac312b0dfae1c533a84a773c918a'),
-      (371, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e6f6ff7b05628a4773d5ea453d7960667ee5f4565c74d971721e608948c5437c'),
-      (371, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '9fb1267c24c4aadf4035d51426d64a86ab9e5d3bd2990b98a500d358ba2695da'),
-      (371, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'e6f6ff7b05628a4773d5ea453d7960667ee5f4565c74d971721e608948c5437c'),
-      (371, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (372, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bdce771320dbe3b6650222fdd5b3f1b90663be7fcae970d0811d4bacaf4b1396'),
-      (372, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b5b0ebeac4bfc927a7f605e0bef3453f0780ad79066ecf327494153f90ca1350'),
-      (372, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5ad99f64b628fe03749d33169d67f660eb560ca804a186a921ff96c57d92e478'),
-      (373, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '83054e801c9cb6c86d61761899816936f138a9455042e0667d8b987db18b9f53'),
-      (373, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', '7a04c25ee448dab52e0bbba034a6e12774cc4ad38d1015d8f4b4651f27a7fb51'),
-      (373, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0dbed9f80a158a735dfbfaf2aa16c092aeba7b033c56c07bc307412b898a1b7d'),
-      (374, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '013f087cc38bc95bd12205b7ba79d95942599930078845b0b33c27206b1c762e'),
-      (374, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '27b4880ee2955e679539c38fce9e4253c97c596f61ec036d56de93fbac60672a'),
-      (374, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', 'fc0b2fb82dfe0f3cacb3f0e4b40a5858c45694a7d844cdb27b7f3d974a21186a'),
-      (375, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2562ee0c0b009e2597b0cb8533358dab3d741fc80cda1330454badcba8fd3132'),
-      (375, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '81e560b6da8da88e320e357e4e70e82826403e1b7fcfa548fdbb56f86e653b07'),
-      (375, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '2562ee0c0b009e2597b0cb8533358dab3d741fc80cda1330454badcba8fd3132'),
-      (376, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5a0eb831cb5a028989a6a12d31d9c8a3c4b9652abd3e784555707d6b7ecb8c94'),
-      (376, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e8bcdac6b3554477d0ead7faf104ae4c46796e90c376fe8ae8bf9364f73cc819'),
-      (376, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '360f9cc64dd76bd7d528f1d7f529ae8e92eabf37a477b769e0574e73125fa78e'),
-      (377, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0b0b1054e903ce4ca8de8a64cd905fc6ad8bdac5ccc0bd41b504705dd440568d'),
-      (377, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e9ef87b96370ef69bcb454a746e00a0e3ea3ffb0c92a218f116a826d78fb3a56'),
-      (377, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3751555d5228ce41fc98443c01c9d211b26b1e9dc58febb70b97743b83e6e530'),
-      (378, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '981899896e2988eec1c3773ad515ecff567ce9144cd7e98f93245c502b156545'),
-      (378, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd2f23596b40be6673aa647197e6143bc28c59706e95e1af0a5d54791359da9f0'),
-      (378, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', 'd8d7102aa142c41d2e883e620b8f7d3551b1495dc39839ba571352ba27623b3d'),
-      (378, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (379, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7d5f6fa8f5013afcad0240a067722e5a9180f2522a0ebf8ca79e6808c64005c2'),
-      (379, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '4c33001be3c3d8ebe455d2f919de75fe1e6f969df9ea596ba732b8661360f2b0'),
-      (379, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7d5f6fa8f5013afcad0240a067722e5a9180f2522a0ebf8ca79e6808c64005c2'),
-      (380, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '97bc6b158f05f3a2c6d148fd70f358413dd998970137c001c887389d6bd3d5e0'),
-      (380, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c794beb4157f1064f0c7dc24439a964a0b4f237c9db36670d156b0495a85c8bd'),
-      (380, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ea86cfafc391b08571d583b5dd752c8808a83941d57df41b8149066ef560d542'),
-      (381, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'aa2b687dcae00e159595f7e5578a61b3f074f87fbc3537a3945ad3f753d9135d'),
-      (381, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '733a81bc27c9a5dea4d0f7c342ce9c5d9cbb7c73ab0eba717cc9970b5b3f8713'),
-      (381, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '930a35376d9abb72fb754454c4ad751ca0f23784f0bf906eb3ac3e577ee02fc6'),
-      (382, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '13670ad121a01ba564b2bd9b809adb5e49a1548f76ff460430b7ecc0c39e61d3'),
-      (382, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '3fb17716f6d30af69744baf7d25816c56cf23220617d84d30951766c2b94d74b'),
-      (382, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'f2ebc952875f63d5098dabee0d9e43f5fd30b77faa8a05d5c5dfbb3f5373643b'),
-      (383, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9a034a1b8b499dc82882b505439d8e561aee77351f9876969d4e15a0851cc243'),
-      (383, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '8ea2f06708ad9667a3390036f1d1d8f307ed72afa8c584f57bbdfeb42da9e7f8'),
-      (383, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9a034a1b8b499dc82882b505439d8e561aee77351f9876969d4e15a0851cc243'),
-      (384, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9996218f3fe2d938c82d212ac32e9ed1e6f83c567bb1c39dfc0be31846e5a374'),
-      (384, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd3adaaeb7fc7b192d038241ba3ead946245b3f639f1e99396ec9e8d34f9139a6'),
-      (384, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '799c257842a84533ed911fe04ba86b60cd9cb4881806736846e340cc69610b85'),
-      (385, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b66e90cd1716cf6a97d3ed09f7fd881066d32ce6988ac1d49ba6f706814b4e23'),
-      (385, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '76cf43e39b49092933b589702a7cca813f9e1d3b3cf552a3f11209f6beed0fc2'),
-      (385, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '986db0b419aa9f3186f9566a0117982144db65edb4b0d7034c54e4b26a4fb620'),
-      (385, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (386, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9191de24c8c1a7d0e474a6bc6610692d9241c5914c36c14897d4b514a22a9465'),
-      (386, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dde55926e0a77ddc9bf19251394e051723af3245889f9bb730afac6d577f1b43'),
-      (386, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'cd00e292c5970d3c5e2f0ffa5171e555bc46bfc4faddfb4a418b6840b86e79a3'),
-      (387, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'dbcf7d8dc1560f1d26401988e589d8823e7a5d3be9f8dad1ababcc4c2a3aab05'),
-      (387, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '565ef8858eb74deb8f267802301027e150abe57d31baf38b42db925d6e0d3ed0'),
-      (387, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'dbcf7d8dc1560f1d26401988e589d8823e7a5d3be9f8dad1ababcc4c2a3aab05'),
-      (388, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b1e7713681882b038e798520485de2db189f1b16b896853bc3e432066c2cce54'),
-      (388, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '9bb51af84fa05f8b71a7156246b7510e12d7e6d391ba5f54216b29342db39559'),
-      (388, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'abd3e55cbb20ba034d192adff24fc1a6de04fb13894b3545ee37aa2e5a8a0b9e'),
-      (389, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fb74c3010c8a4c558e8b90ab5d6c95f33caebd581c0bf07943aa9ca5e2ed605f'),
-      (389, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '10d4df2c69ed2fca58d16226ad2854bfd48651994f543facf312a8762dc3aa53'),
-      (389, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3664604dff0490b57383a4c7a56ca7e3796e1d37124a485afc9f5aac59215fc1'),
-      (390, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e8554a99f5cb8b9453888e862d533e9ac9c96def82bbba5caaa802a769483bf5'),
-      (390, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '04f178301dac1f2ce7e8a15940d4f472a25d1beb3ff2c757bbee688f8826b1f3'),
-      (390, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', '53641eb5798bbeb693a318fba1e14d7a60bbf237f2ca1dc32835a784f730989e'),
-      (391, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a022aaeca98d70a8d810a792685df48461d7c4e486cdec282e079a6aa9a4869a'),
-      (391, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e45c9c2172932453f2cdf22e6ccad321f3f8f730dd9eae9f39190c4d33d81474'),
-      (391, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'a022aaeca98d70a8d810a792685df48461d7c4e486cdec282e079a6aa9a4869a'),
-      (392, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b495380ebac5ae8e294846af6139c3ce792cd1f2c3ea2fad0abff74c9e9d4365'),
-      (392, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fc197731eb9458690255e925a2a470b5b6592f91e8f7214c16a84b035728280c'),
-      (392, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0d89183d116db29041053487320046e6e25a05f831ca2a62172d87e15a0bbd75'),
-      (392, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (393, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f66e185483586568c2515936047e9016dc5ff7e5fb60d4b9063ef6e899fe946e'),
-      (393, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '1595166059c832f89669e325eae8051cac20c428031530f051151126160d16b5'),
-      (393, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ef9bd6130a17ea73367ae54952e0279716e708fe62a2f57c175e92aacb2d3345'),
-      (394, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'badd60947c6ff9d134dfc70d88e037759ee3d97b3918963d3ba017c32f1425d1'),
-      (394, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '62b0420cece614e7e240584de5695772c085f0b8577b55e8460e945b27aa193e'),
-      (394, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'be469d3c1ec89e979608d85eabf4e36ad46cd3775cc0864394a7b7a2abb78e7d'),
-      (395, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd42e77dd2d224cfa42ee066c026959a7071d34d29b07ce0077e6cf47dcfc10dd'),
-      (395, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dd23977dbe3926470dd71e7b0d600f610759745cfd704017bbc7bfe11114777a'),
-      (395, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'd42e77dd2d224cfa42ee066c026959a7071d34d29b07ce0077e6cf47dcfc10dd'),
-      (396, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd642020d3184a954d29e858ff6bae1f61e1a671cf0930d4a66bcfebd2398aa03'),
-      (396, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '0e7b13031b82e02c6f279a625e7665ae2f301ae456ba7f14de59e86db9a34173'),
-      (396, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c3ff9db5ae02a7e5e313789a593a7f520b59d28df0f44e4805bab35f9396ae67'),
-      (397, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b56c6ef6eeeeadc7b43c7050d95463c1e0a5ee14f1deb64ee1255bed470fb16f'),
-      (397, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '63fdf18b8c6ac977bdfcf413ccd290c82cd78961ddb1e4629f6405a43ee58d29'),
-      (397, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '17940c6682bed4c1cabc1adea9261c1f408f55dcde604b196e29f15abb7aaae2'),
-      (398, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '15ad8ad83efee7cb6be1c1f5a59e2d80622c4a3fe8adeec98fb1149451993ee6'),
-      (398, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '7b08c204b8a9de43da92c9e021dcadced8f035d87d0e35e84ead9396bc003059'),
-      (398, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '280cd897348c9100635bf79e7dbda96fac1641df479216a6eb059c52522860a3'),
-      (399, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1e922ad330705ac6a78a3642d7b85f101aa5392def364af0c649b8b0355ff14a'),
-      (399, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '019865ae9c7d4d51b5084a4598752861fad7095ac622d1791e9ec5fe3587745f'),
-      (399, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '1e922ad330705ac6a78a3642d7b85f101aa5392def364af0c649b8b0355ff14a'),
-      (399, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (400, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9dffd1ba197f795dc4747944b7c580e7d9b818e215d3d91a65da36fe26827b22'),
-      (400, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '956e96ea2e930877846307a02d3b4feb5338ef278db76c1314f79cb91b3009fe'),
-      (400, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '40bd7c388670b555066ebef488e4066bd3152f5dbf86e11a2d66e054143ca972'),
-      (401, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3fe79529f89136283ea744d224972ef279320db76826950265f91c5ac2b86023'),
-      (401, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', '62cc106fe0ba3330ecb96b41cd6a5aaf80c0316d4cbcacfb0f919bb90386cd41'),
-      (401, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b0c2e59e2e64942b91d542a4eda33648ebb3ab7fd46a0c0f7747099b1f53c5fb'),
-      (402, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '93b6a18a780ecf976fae9ca832fcb0e5b8297604048302599e6d09b14b00c5da'),
-      (402, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '52ad721d6c3f2cc72c21aefd1d7db8a78727411c3375d5268f6ee15c3aa6d883'),
-      (402, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '48f63c0f55e0a3caa24087c6c4181aea2232c02bc7e92aae85fa8dd23a67c849'),
-      (403, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8eb8f4f7e5985f454060e83f0dcdd42ce9cc3da6543c6031b4cd08ae4d134bf8'),
-      (403, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c1c2d232655aa2a4b91da388cafa38dc7deb7fed52e1ef6157f567dfd9843382'),
-      (403, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '8eb8f4f7e5985f454060e83f0dcdd42ce9cc3da6543c6031b4cd08ae4d134bf8'),
-      (404, 0, 'Im1', 28, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2d2ea421796ea54e77baf3fbc8be46f729930a5d1df2e2c0fccfe1aa7909cebf'),
-      (404, 0, 'Im2', 28, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '4364910d9081eb6e6b2edb5ee694d5b335f8dfd9686d0b21a3be0fb2e1a20500'),
-      (404, 1, 'Im1', 28, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', '05a54d729fa122249e5e12a0b5e46febe342ff03f5b46e41d46524b56aa8d1b3'),
-      (405, 0, 'Im1', 29, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '955263496ce561753470a514e1c5d9da96f203414bda8b6c383e6c37a2769607'),
-      (405, 0, 'Im2', 29, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd904efe95dcef1c73a059e3faf1996fcb824a46bfb39376eda6e571ff3e89013'),
-      (405, 1, 'Im1', 29, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '59b5cb401350520ff3cc92de450dddf8a0a80740f7ae8c48a2437bb30b2042ec'),
-      (406, 0, 'Im1', 30, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fc58cfafca9b6cd7922f2520585c0c8db84576da34aeea9bda3d78e4c717e54b'),
-      (406, 0, 'Im2', 30, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fee3b5d1337d71b8f0ef778d7cc44a939c6a399b08249c722e1108274fa4c61a'),
-      (406, 1, 'Im1', 30, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '78d689e87e8869a5632069c3cd93c988dc7908b3e661eeb6536497ec22d7f2c6'),
-      (406, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (407, 0, 'Im1', 31, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e867f781860bee19984f5350b817fcef3dd3dc7848ab3330e997df457d4455dc'),
-      (407, 0, 'Im2', 31, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '67998e173827005c9ab1a4787e250c7d6ea6cea6cf509f9fec355b09abe3f9be'),
-      (407, 1, 'Im1', 31, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'e867f781860bee19984f5350b817fcef3dd3dc7848ab3330e997df457d4455dc'),
-      (408, 0, 'Im1', 32, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd25e76487d3683ac1814c0a83f2827b050262426bf64633999f153c2865b5053'),
-      (408, 0, 'Im2', 32, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '36f4dc585c28bd23fdd0228e2694281d176838d03d820f53bfe8433743bd881c'),
-      (408, 1, 'Im1', 32, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '63286b8aad8a6bfdd0fd7913852fe205c5c1d38bd01ff258b5589b220aff4391'),
-      (409, 0, 'Im1', 33, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'e6cd395d2958f2e1b6c21096d2746e4f44c3e0d7b5227524fb3c7ca55b2e314d'),
-      (409, 0, 'Im2', 33, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '5e0991081a9e373e2ff8b4a012d9443a076964f0dcc6d93c8cf905e985e11394'),
-      (409, 1, 'Im1', 33, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5a5f199d39b75f22eff872c00f1286314e1eb6f407069c39d16f175055c771fc'),
-      (410, 0, 'Im1', 34, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6ac275eb82cc612f1b4cf30505866905a3671308a5d25572c1635dc9244eb5a2'),
-      (410, 0, 'Im2', 34, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', '3b21b7d90a0f480207e103fe247fb67bbec27ad6cd2eac25c7bc73bcc905ce52'),
-      (410, 1, 'Im1', 34, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '9ae41229c1fbbddfccd0f8bffcb4f50bbac3300a2fafda9e05d225a2a251f2eb'),
-      (411, 0, 'Im1', 35, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2e887118c07cd8cbf0d8ed631b4a1d5526c67e1b23420ef867db12588a9c88e4'),
-      (411, 0, 'Im2', 35, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b4f8b5d5874edfcefd558b0802548f9ba99bbccc993d7b36fe45ba30f6913ac0'),
-      (411, 1, 'Im1', 35, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '2e887118c07cd8cbf0d8ed631b4a1d5526c67e1b23420ef867db12588a9c88e4'),
-      (412, 0, 'Im1', 36, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a0eb3ae095e78fb3a6de21677be3eac82d0241aaee1d7225eba8d8466feba115'),
-      (412, 0, 'Im2', 36, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd41f5d15fc1244e5347155df2f7d7700d662281dd8e986a9ee9076cc988221b5'),
-      (412, 1, 'Im1', 36, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a9882199aa549f73dcafc6834b563c7edb2aa570d99b13217bfa2b087397f0de'),
-      (413, 0, 'Im1', 37, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '26af3bc4ef7f32e540e84d307cbaebcb59502a5246366404d32cf46f7a12952f'),
-      (413, 0, 'Im2', 37, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '6bef3570f978187a38b55ed711cddda84cbceaa5c1c0e69fdfb90959ae09ab84'),
-      (413, 1, 'Im1', 37, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6aa32599db2e0097b2cacd9a0dec279597f17342ba6d4d7c81a0768a2bdaa51a'),
-      (413, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (414, 0, 'Im1', 38, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a5526fce610a581f16c22b6e2171601b34ce5cb016f272432c4d7b65cba98427'),
-      (414, 0, 'Im2', 38, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ce3a652bd6625dd68bc8cd02e31ed93ea683478a5a66af33b6e917dd21ae4f26'),
-      (414, 1, 'Im1', 38, 38, 'ImageMask', 1, 'FlateDecode', 'raw', '0eb7bcff71e76a92592d58a5911a446202667bea01e244fa0af59a2a1e1b1a9a'),
-      (415, 0, 'Im1', 39, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4c288b176db21a7754585ad27750a382f67a5653e40ed347e496dbc90cf256f4'),
-      (415, 0, 'Im2', 39, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '3a65b0d86bb5bb558a2243bf9634bac0efccd4a13edab75d67499ccfcbd37368'),
-      (415, 1, 'Im1', 39, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4c288b176db21a7754585ad27750a382f67a5653e40ed347e496dbc90cf256f4'),
-      (416, 0, 'Im1', 40, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '81e7e56aaea6befaee9619168a1f3036c5bc739ffd92a52fd32ccbeb90458a80'),
-      (416, 0, 'Im2', 40, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '58eae5a53888ba49aedd00bc7f319d09043532cbc4ec86b63b0d426ab4af38fb'),
-      (416, 1, 'Im1', 40, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '2b005464cbd24a89a675989eb9b0f9349c034635454d35dc538f1875a3bc71d1'),
-      (417, 0, 'Im1', 41, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b6105a33232a474ddb2b2a9b05fd9ea6cdb5a5cbd3466970cf1db23bbee68fd9'),
-      (417, 0, 'Im2', 41, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f7984603a684cc3ff79116d0e4fa7b34384f5aca8486133df0630260f99f81c2'),
-      (417, 1, 'Im1', 41, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd9cdc2edb15bda68a3ae0af63c5f4c3ad7b90ca82a57656973d55d7f63a42bb6'),
-      (418, 0, 'Im1', 42, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6705a3b253281136a3c67da21f18c7a29a0d684519aa626006be534b9635acba'),
-      (418, 0, 'Im2', 42, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e331068a252f3c0d7800cf46c3ab6af41e6ab696b67af0dd4940b8b41eb000fc'),
-      (418, 1, 'Im1', 42, 10, 'ImageMask', 1, 'FlateDecode', 'raw', 'de1da8f3791deb5ea5a11c9a67179b1e240aa14979524a3cc28add0e3612c0fe'),
-      (419, 0, 'Im1', 43, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bbbd84b59f51feca553161d21c83cfc78f85e60031f1026719d21792bc85487a'),
-      (419, 0, 'Im2', 43, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '256c6d800df9b856675da49f02e7b557e0d56f12e4169c8af3881fa3a918a883'),
-      (419, 1, 'Im1', 43, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'bbbd84b59f51feca553161d21c83cfc78f85e60031f1026719d21792bc85487a'),
-      (420, 0, 'Im1', 44, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '82adebedf7ef86fa0956b46a8154d8e5d7813bc75c99ce523560aca43a92b65b'),
-      (420, 0, 'Im2', 44, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '1bcd3f3d154a3bc3b256fa409c0f86727ff598944295ffc4ea93561515c8626e'),
-      (420, 1, 'Im1', 44, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c143e14adde0bf6c8c3185491911b15f35b3cda4d2d450a0c75f15b2702927eb'),
-      (420, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (421, 0, 'Im1', 45, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'bffbb4af14df9eb35a7ada61229733ced4930841d42459dbd6a48495d4f3e74d'),
-      (421, 0, 'Im2', 45, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '32e58ebe34aef28dd8c585f3a50c75fbe577f8ea1630dbe7705d87a349e43bab'),
-      (421, 1, 'Im1', 45, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd894c84a8ef4786e76a2bb25d9d76b9784d1e553a972529b3c56cb98b7dd4b92'),
-      (422, 0, 'Im1', 46, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f1b660fe5584881aa2dd1c9d7203013e8edd4ff6d7b9aa5b02b5ec9d0cbeabd7'),
-      (422, 0, 'Im2', 46, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '20934977751603f5edefb93d256cec1627e3af780206c1333b1bd331523b1ad0'),
-      (422, 1, 'Im1', 46, 14, 'ImageMask', 1, 'FlateDecode', 'raw', '61454e5365ee3c28c47392285a34b640464d1c7f3e3fdbc83a971c6cc659cc23'),
-      (423, 0, 'Im1', 47, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ff0b4bfe600e91d9c2609cb37fd1ef8dd7bf8062ab49bf6fb5e30491d9f9e713'),
-      (423, 0, 'Im2', 47, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fa748aa64086f4c0c598b2bbddee21f61ebd895b80ee733e2ad1c81245e4585f'),
-      (423, 1, 'Im1', 47, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'ff0b4bfe600e91d9c2609cb37fd1ef8dd7bf8062ab49bf6fb5e30491d9f9e713'),
-      (424, 0, 'Im1', 48, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8243e17598f5c86b92ab7b7cca29e02f93121fbe13deb07f8c1af74a7d82af1a'),
-      (424, 0, 'Im2', 48, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '445399adfa9dd199d8b570f2baaa09afe041ba7ab8d4717b8beda19e21cd8a80'),
-      (424, 1, 'Im1', 48, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'bb04a99f18bb89dc76dccc954f456bf078400176476f32ef7d6e351979f05338'),
-      (425, 0, 'Im1', 49, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5ba8cdd20d306475e6d9e3106a1c693c3e5e7b1858a8e31060b9c55264987a64'),
-      (425, 0, 'Im2', 49, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '6dc0d22efa814b6554057612a821e7363a5dbf3422666fa7adfc418892b0f4db'),
-      (425, 1, 'Im1', 49, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b0b496e0e0871ba482636d4c5d0b603b37a2957b15af49c2d145bc9f4489e28a'),
-      (426, 0, 'Im1', 50, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd674e142a813071d54b19e4d5a60b2a31097a0f6883d52d68b1e0e0bc3775edf'),
-      (426, 0, 'Im2', 50, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', '0cc5f67437278121a0030332cf5e8c36793d9bf444758823d84e96c83860b084'),
-      (426, 1, 'Im1', 50, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'e8628ea74e839affd77f867e7a3198dc271d72723654afd3fbd5c6ca0f6e0b13'),
-      (427, 0, 'Im1', 51, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7373deb4edeaa93be766997ca74da5728eb2af7b460681c73f62bc738c13c66f'),
-      (427, 0, 'Im2', 51, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c1a574dfbf139b2cb4d8bd0d3be8f461a146bc57f612114caa4c87476b51cbb5'),
-      (427, 1, 'Im1', 51, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7373deb4edeaa93be766997ca74da5728eb2af7b460681c73f62bc738c13c66f'),
-      (427, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (428, 0, 'Im1', 52, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5d5fb2b4879f9b53fdf38099b8f898912b62863ccc0756606268a940083f9a0b'),
-      (428, 0, 'Im2', 52, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fc5c853e63dae1a73de047eac47e4163b39c1f126271861eb7658196a5f51ce4'),
-      (428, 1, 'Im1', 52, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ad424b9aeadfa5d8bcba9faf392e345623690e23db3d40e5d7383f60fc839f1c'),
-      (429, 0, 'Im1', 53, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '99dad6bb1db9afe24ff06146b5209a5adc795530848444084524c50199b442b4'),
-      (429, 0, 'Im2', 53, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '36f8258419e83e4f575588f6f3fbb6771f205414081a9f5fd9de588751972773'),
-      (429, 1, 'Im1', 53, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'bdfaaf0d39619b8f363d31f57f9f7b25b1e9d4f4bdda9c7df6fbe9a8f41ece2f'),
-      (430, 0, 'Im1', 54, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3aff9d08d8ad79c47905db28048184a24245e39ef92b93be3da3b04f4ed3bd24'),
-      (430, 0, 'Im2', 54, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '817c5f54cb554da58cc790ecb2b758359fed6e5a08a6366a8e6f4d1f1da99cad'),
-      (430, 1, 'Im1', 54, 22, 'ImageMask', 1, 'FlateDecode', 'raw', 'bc929cf50b67b257169e489f72ec6e9e912faaeaedc35f0eaa04f08bbdbb5e21'),
-      (431, 0, 'Im1', 55, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'afc531030e0d20b043ce4951ddc1b5246a40eee1a99dffa7d7069915d38c8b8e'),
-      (431, 0, 'Im2', 55, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e7e0967787e878e6ceeaa490ec07c0002a79c776bc8daf2187dd9e2b47826953'),
-      (431, 1, 'Im1', 55, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'afc531030e0d20b043ce4951ddc1b5246a40eee1a99dffa7d7069915d38c8b8e'),
-      (432, 0, 'Im1', 8, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0af5465d4d3279c18593ebcb5264a474b58619bfbf5bb973d932b9098d101171'),
-      (432, 0, 'Im2', 8, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c2d61e9dff7d9454b94e3d12cd90b17ae6cd72e9193c28562aa81d33c7ce149c'),
-      (432, 1, 'Im1', 8, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '27878e6e08e1b68bcddd9f0c15767282c294b23fc7735bb5a3d06935022188ad'),
-      (433, 0, 'Im1', 9, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '782c367b7366203f7949b3aed8b23fc1ae711e63fbdf17c8b11fab91d04deea6'),
-      (433, 0, 'Im2', 9, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd9f7bc595ead33c20396e43f6ca765f151acd715278740943c0c003029a6feb2'),
-      (433, 1, 'Im1', 9, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b151567acc00bd41adf8ecc553c1e881c5fb0aadbceee4e1e5cf0e94630fe180'),
-      (434, 0, 'Im1', 10, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '71c4c894d92de5a1b87eb8ab50bbb48fe54c398b7ba3a47397aa61478eb8f48a'),
-      (434, 0, 'Im2', 10, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '30acdcf31699231a3e95f43c89763784646b74daaaec1d1aaa0a81b6de82cc74'),
-      (434, 1, 'Im1', 10, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'b3bfafb816b71d075dd9a35bde48dab509b1eabf28184456e53b45a313f5e24e'),
-      (434, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (435, 0, 'Im1', 11, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7323eb8cad03d20e5821029ce58c068e949fcd2cd7606690302c0eeb38ac784f'),
-      (435, 0, 'Im2', 11, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '614f957fa4006f72cdf0665fa158b09834ceac03cdcb0220cbf857a411b1c1f8'),
-      (435, 1, 'Im1', 11, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '7323eb8cad03d20e5821029ce58c068e949fcd2cd7606690302c0eeb38ac784f'),
-      (436, 0, 'Im1', 12, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4737b42e2fdf421b8b098a2e5952268875268f587523afce0147168610cbf1d9'),
-      (436, 0, 'Im2', 12, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', '9b066ac44ab14c0fdf9ef2fc952da971a398535e1c7b8358d6188ca0cc14ade1'),
-      (436, 1, 'Im1', 12, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'd39921462351eaa648a2fe2698f703a335f2c7d27a8ed239528b32fdc6632e80'),
-      (437, 0, 'Im1', 13, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2e99768bf3da3fcbdec21cb0d4b5041ca6400ee18ccf54b8ac5997274b9cd17f'),
-      (437, 0, 'Im2', 13, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd585e2ff275697a7fc64532ae5d51ee77647f07c4292176ee170c5d795bc783d'),
-      (437, 1, 'Im1', 13, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'ae839b5e1791f38c11f8d85a0c93d595aff5551b5a4f434c7bf223d16330a393'),
-      (438, 0, 'Im1', 14, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1e4b4b2b9b9a075d0f75ca8427313c73ea987d892f366361dde0b453b0e1c1ee'),
-      (438, 0, 'Im2', 14, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', '92a441fa389fd587c39c5a67d3210ba1a3668260bd62096c9c8468bf199f18d4'),
-      (438, 1, 'Im1', 14, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '749e934d2afca666c51b2f06e88094d057259931108fd9505c6e2f54f647b044'),
-      (439, 0, 'Im1', 15, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a0716e8f9b23256ef790d4cd73c964b1603e59067328d0b37f3318a50c12f38c'),
-      (439, 0, 'Im2', 15, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', '590521adc92fc574427b912b3899e30903b8701ecadc736e87f1985268d36d1f'),
-      (439, 1, 'Im1', 15, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'a0716e8f9b23256ef790d4cd73c964b1603e59067328d0b37f3318a50c12f38c'),
-      (440, 0, 'Im1', 16, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ad803d8cbb524753f5d144dc23c9282e365ae15374ed604bc601a5fd8a72eac6'),
-      (440, 0, 'Im2', 16, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c79e869cb924a73e5bd6ab183cfce01930bb61f96273d7fd9d7c2e5aea3026b9'),
-      (440, 1, 'Im1', 16, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', '878d9fb1e25b28db933504ecfab1451db6b2f60d45a5bd600fd84c21056b66be'),
-      (441, 0, 'Im1', 17, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f9e8be017e19a41671a5b4c248cffe854215339ee383ba5b9229ac8a46d3e641'),
-      (441, 0, 'Im2', 17, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ed329f8acebb7c6e73f02095173b04cf00bcd594074812e05a5f53ab22f9055c'),
-      (441, 1, 'Im1', 17, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'b23e92e25c6a36c637efff621a7b9c859c3abcaa23ab8bcf34f382ee66854ad0'),
-      (441, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (442, 0, 'Im1', 18, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ad27cb8a1cb1a256df1e9694f9b40252613dc17b77feb15a7755c5fba5f7ef93'),
-      (442, 0, 'Im2', 18, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c7fa3c70d705a4118380a9dc3c0f1bc800c9bc01babc63559df6b4fe16739bb9'),
-      (442, 1, 'Im1', 18, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '617f2d8600397162eb9cada7f4f17756aae978b71ef1c5f1a8eb765126034277'),
-      (443, 0, 'Im1', 19, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1ba8d2e13b7eaf46509ed172a96092adef842d412e75ebaf2dc5a5743e4ffedf'),
-      (443, 0, 'Im2', 19, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '2e229dfb4764a362e8f45a6f1d81598b24d8a37140d7aef15a83ebbd7daea220'),
-      (443, 1, 'Im1', 19, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '1ba8d2e13b7eaf46509ed172a96092adef842d412e75ebaf2dc5a5743e4ffedf'),
-      (444, 0, 'Im1', 20, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f91e5eb270d39fdd04b94740ad4e9af5cec82310facc708bf471208fc2ace94d'),
-      (444, 0, 'Im2', 20, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c6c1424531a26ed0325788a482e1d30dc720d549fd859c0fdd607931cd39e7c3'),
-      (444, 1, 'Im1', 20, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '01bb4465fb5ce0911f06c9c3d0097631a6cdd5a1d795f91041a7281cfc876a10'),
-      (445, 0, 'Im1', 21, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a29eeb5e0ac086d1871f3ad3483959b84a2315aa7cca7388dd33dc5797a640b6'),
-      (445, 0, 'Im2', 21, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', '34be5bcac9e768965b8124517900d9bfd8203d86a569a55d85f32e8438cb8f73'),
-      (445, 1, 'Im1', 21, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c2b52d8e36d4f1058cd2045143795788800277677fba7cc8e40c2c81b4d2f202'),
-      (446, 0, 'Im1', 22, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '64fe4d6f8487f8264dd683e8bcb88642c700feb6cc948864b228e448c8c9e93c'),
-      (446, 0, 'Im2', 22, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', '9e4a754a24fdabe370142398ec2856eb3b4ec471815c2c40e415b2772fbd5bb1'),
-      (446, 1, 'Im1', 22, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'dd458d2f75ea9d444f9f10357cb11a17139830c5bf82c51aeb5f75f31e8225fa'),
-      (447, 0, 'Im1', 23, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '51756160269e16929d015092146db4909f6dd7e116ad75f46b9eb61ff2839819'),
-      (447, 0, 'Im2', 23, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dd64d9781eaa763e2173ec282b3327034750010412bc35dda9fd1ee63eba88da'),
-      (447, 1, 'Im1', 23, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '51756160269e16929d015092146db4909f6dd7e116ad75f46b9eb61ff2839819'),
-      (448, 0, 'Im1', 24, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'b41bcb4a84cb81ff7e7fa9ef751a13a63c4ce1c62c54aa2e4d32276e1313cb0f'),
-      (448, 0, 'Im2', 24, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '399b82d5f070b5f716fac7fcb530eb3beca40098833f3a87c3f70dac0353b964'),
-      (448, 1, 'Im1', 24, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', '6c2327412fb6d81dc6fc601798255d2295bcf1c3c1ea289025347461ceacdc7c'),
-      (448, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (449, 0, 'Im1', 25, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'fa420929bf37b50a7e62f494a3aa5840bc6a8f5d214bcf4f7737b0fcf9c3559b'),
-      (449, 0, 'Im2', 25, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c1bc73b4ddf46db6346b1df2f910f98423785b162438a852b8fde75ea93a3d99'),
-      (449, 1, 'Im1', 25, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', '616b196547b53d60bf7ae8a3c8e5fca29156b79c3c21e1db13168b02bfc37f71'),
-      (450, 0, 'Im1', 26, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'cd387ea1b2d32f750904e5f9b86ccc92911d6fcfcdcd24342ff5372945ba3ae0'),
-      (450, 0, 'Im2', 26, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', '9487a7bbc1f7eea32f87427ab9f1a8965aad98d035191457aa793a4abd7e61b2'),
-      (450, 1, 'Im1', 26, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '31fa6ef34475b9083308dba22f7d7b587b769ed8021b4112f51e13e7a6c44fcb'),
-      (451, 0, 'Im1', 27, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '376e78a7696695383a02a8d5db1d36f6414b65d7afb482cb168341ea11f0c8d6'),
-      (451, 0, 'Im2', 27, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', '63b8392d311d3977b5d4dd12ac238dba487f2d766c2d9164eb5f545ac778255c'),
-      (451, 1, 'Im1', 27, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '376e78a7696695383a02a8d5db1d36f6414b65d7afb482cb168341ea11f0c8d6'),
-      (452, 0, 'Im1', 28, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '38e334e9742f7fa4548054f55b51a6c8893610c061855adb789f66c1333596f1'),
-      (452, 0, 'Im2', 28, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', '2f601b1f9e06cf0516747c13ac9824967b60831ec4ace50de05076065838c285'),
-      (452, 1, 'Im1', 28, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '0b3bc0c53f6c78dbc556f4294da670c30fe6454dc8dd5d21f58fc59afc895593'),
-      (453, 0, 'Im1', 29, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '482bb6b6ca932c2ba096eed3b1e5c50fcea12ab5b9b7e4110f88814a547dff70'),
-      (453, 0, 'Im2', 29, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', '01bb63765ee6cad0bde26a03e71dc7f996a820fe78db4a0bd364b9180ed3a1c6'),
-      (453, 1, 'Im1', 29, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '552f92fe3f8b1a97d9c8964bed497786256bb8303017c264d698d27848313022'),
-      (454, 0, 'Im1', 30, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '5f2ca522cd192eeeeff98866287d47870dffb45843c85d331fe9abfefe650e56'),
-      (454, 0, 'Im2', 30, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', '8b4c096b0d1257e34c2b01a2bb84b154548fe70ebfcf23442af50fcd8daf992b'),
-      (454, 1, 'Im1', 30, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'd4197fdd86089cca28cc3b3e5cc4e67628a8fc16e8808e03a13a4682c1ff0e6d'),
-      (455, 0, 'Im1', 31, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0b6e89c83733af87c7e84ee597a6fc4abb2b01db93c7b226b11b8ff4ee24c669'),
-      (455, 0, 'Im2', 31, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fc68c24551e7a8b111a724763b6f44aa884121a1818196137728d1ee6878db24'),
-      (455, 1, 'Im1', 31, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '0b6e89c83733af87c7e84ee597a6fc4abb2b01db93c7b226b11b8ff4ee24c669'),
-      (455, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (456, 0, 'Im1', 32, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '26aeb0db6371bd5d121f77a9ba28a1fb689aa15ed3b41c5b3429152a4f4ab3c5'),
-      (456, 0, 'Im2', 32, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', '15a78b25d6f1b38ddd617ad901e9325409a3ca8290e549449f61d7571ee006e8'),
-      (456, 1, 'Im1', 32, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3868367c8c5bdb43974a282dc4a474cd07770b1c12e394b65b919f19ba3938eb'),
-      (457, 0, 'Im1', 33, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ddc6b5e68eed0e1344b508e7c9087b2b63064bc0b605c8f8adf7d13cd74bc01d'),
-      (457, 0, 'Im2', 33, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '0155fa70684e4de413aa7a9a84254601455411d65547ab1ee306c68aa6d7938d'),
-      (457, 1, 'Im1', 33, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'db067a8694e4fb4108e68b321e1f0fe641384f0f44005b9cb9ff95acb5d2f129'),
-      (458, 0, 'Im1', 34, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd5eebd6f9792187f59c83b53aa01376425b19e931aed8425ac4ab349ead82fef'),
-      (458, 0, 'Im2', 34, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd10776336159bbf4f7a96c351964466dc52a8fc7cbae09522541e3a4f4c7896e'),
-      (458, 1, 'Im1', 34, 18, 'ImageMask', 1, 'FlateDecode', 'raw', 'e5d6726ebfbce0223f61d3e2cd65bd16ff42c2153a7d15e121324a3a918dea5c'),
-      (459, 0, 'Im1', 35, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'f3678558e7cc87ae1211ac303c6898523740293b5616ad98ba70a68100b88757'),
-      (459, 0, 'Im2', 35, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '193774d4ab19088cb29af361c958a1e7bf0ee72a3f054ae18bc086a391997f74'),
-      (459, 1, 'Im1', 35, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'f3678558e7cc87ae1211ac303c6898523740293b5616ad98ba70a68100b88757'),
-      (460, 0, 'Im1', 36, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '179114b5f566d80a01c3bd052ecff393cbe8f7db5bd11b73f6ac5f59acb873c4'),
-      (460, 0, 'Im2', 36, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '179ec32861c6278e6176968490f2753a63bd5bb3923a7fbd2458d75e631d6136'),
-      (460, 1, 'Im1', 36, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f00251b43fba9da27e20998853c76c0f113a671f3a62f5ac7a26edd3264ef153'),
-      (461, 0, 'Im1', 37, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3d036eb6a84b0695e1385bdca718be51dfb1fe8cc7b69f2534f5e22aa22de508'),
-      (461, 0, 'Im2', 37, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', 'fab6f14cd431e0982a92b50952bb426815416f32676e1e8eafa6818fe224278a'),
-      (461, 1, 'Im1', 37, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '3e5859d2c3772c3a3db25cc9560bdb973930253114ece50e0fa52fcbe0844171'),
-      (462, 0, 'Im1', 38, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd2a602c7ca1b400ac406f45f5f8efde74bde15cc8b55a91acb28ead57c72dd83'),
-      (462, 0, 'Im2', 38, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', '37e092e1cf731deeee09d79d2ff154959d2d2173336fdb70bc58e148e9fb1f16'),
-      (462, 1, 'Im1', 38, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '875fd088c3e4fc6a48ec6d7f9b897956a5ab6a83b9710de550857731c1311fef'),
-      (462, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (463, 0, 'Im1', 39, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4836545be235a566def4eaef59ff6b4a758f9c345fdab4bb9dd57c63fc3a4db6'),
-      (463, 0, 'Im2', 39, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', 'f8a60b30bf9e80531a0a94e1724e5f9c710393a48e5b1fcddcb735296b4f4959'),
-      (463, 1, 'Im1', 39, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4836545be235a566def4eaef59ff6b4a758f9c345fdab4bb9dd57c63fc3a4db6'),
-      (464, 0, 'Im1', 40, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8f12bc3fe09c466bc232fe09715779f434d909b4d74955143a125dd11a56e817'),
-      (464, 0, 'Im2', 40, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', '126e3f7c1492077d97fe36a74b434f3724ebc809cac9e4dcaef5bfd9e8927491'),
-      (464, 1, 'Im1', 40, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'a84441e28427a6e58817b60dc1f37810da8a15a2d60bce84bcdf440f12c956ec'),
-      (465, 0, 'Im1', 41, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd3a0dc206bf00c408319c0858f1c81e2e32166a8fc2534ff53862f7cb4289965'),
-      (465, 0, 'Im2', 41, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dcce256abb213eb06a9e9d22e8f7edd8e330411a1758a1cd1b281a81b4aea5c9'),
-      (465, 1, 'Im1', 41, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e0c2cbbcc6ba3fd6c00d889b5ae7e88ae26913fb1412e26d004e136b219af0d9'),
-      (466, 0, 'Im1', 42, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '0c704890f17c574410b16e95023ac3d04a53a34ab96d6e42d97c7f9fadb88001'),
-      (466, 0, 'Im2', 42, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '3062fa666471153e780064e53abb5f46d7c2f8a84b529a2ff3a32b51e8ca1a84'),
-      (466, 1, 'Im1', 42, 26, 'ImageMask', 1, 'FlateDecode', 'raw', 'ffa73cbe6dea8b1e258eb587dcf161d21ad7ba52e8a2e77d568f0f031b7f64ea'),
-      (467, 0, 'Im1', 43, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'adf3228cfafd044ea01a3e2056f6cd1ab2e586b0b92a375d7d27ec51064c1327'),
-      (467, 0, 'Im2', 43, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', 'df2a79f59fd9ebd65a6838c35cf92748f1c80f867df9563fd68dd74935fa0b6d'),
-      (467, 1, 'Im1', 43, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'adf3228cfafd044ea01a3e2056f6cd1ab2e586b0b92a375d7d27ec51064c1327'),
-      (468, 0, 'Im1', 44, 28, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'eb3e70b9b7095d28932404282f362daf28c1492729ae0e501f641c2ea95131cd'),
-      (468, 0, 'Im2', 44, 28, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c12bd90203cb6469d7fbe29785176a9a173eae94440d0640a847e419139ab80f'),
-      (468, 1, 'Im1', 44, 28, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'cc95c4f1b72542f45510fa56eec3048747a52110bb236d306a2d93d97ee67692'),
-      (469, 0, 'Im1', 45, 29, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'debb32461ec4089fde7c10f98dc89b045661874a3295d648a04d3496967d1b96'),
-      (469, 0, 'Im2', 45, 29, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e5019c738040ff4d65ad3112d975d8a704aa5ee2e7fb1f103b910b3c702aa5cb'),
-      (469, 1, 'Im1', 45, 29, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5d9a4a218face82a8be884c6efd91f9174e3dbcea16cfde140b0a682c64a454d'),
-      (469, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (470, 0, 'Im1', 46, 30, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '403dd6c6c8eb1e02a74033674374105d2bbecb2b724dfe1c739c6cd816a20518'),
-      (470, 0, 'Im2', 46, 30, 'DeviceGray', 8, 'FlateDecode', 'raw', 'df181f882247a2a076325fbbb5639c7ad2fdb8ff9c85198ca8c28b62b70e4123'),
-      (470, 1, 'Im1', 46, 30, 'ImageMask', 1, 'FlateDecode', 'raw', '4fa486120a534517af7e3beb33af821aa87ab167b1b371725b97237b55b581b9'),
-      (471, 0, 'Im1', 47, 31, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '680094c713c9617cd01e00790d454dba0031afbc1dc68cfa26c5871fc57d3a3c'),
-      (471, 0, 'Im2', 47, 31, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ef918f2358827f567bbc6d8038acd6b465f9b5cf6f049f48a413bb609764ba68'),
-      (471, 1, 'Im1', 47, 31, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '680094c713c9617cd01e00790d454dba0031afbc1dc68cfa26c5871fc57d3a3c'),
-      (472, 0, 'Im1', 48, 32, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '3f84077294383580f72c770b59347f32911ac4c86428f05f710aa710d06f17cd'),
-      (472, 0, 'Im2', 48, 32, 'DeviceGray', 8, 'FlateDecode', 'raw', '7944e34af2fe6608e8f4194880bb97e231273c48fa0d5c3fdd04d567015576dc'),
-      (472, 1, 'Im1', 48, 32, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c19160eb620771c7abc52cae7b3dde067cb1f46be11f35b41b081ea295ed9d39'),
-      (473, 0, 'Im1', 49, 33, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '19b32ea24c04d58263df59f083493e27e9a890c52d3eca7cd8fb5be5135ba46b'),
-      (473, 0, 'Im2', 49, 33, 'DeviceGray', 8, 'FlateDecode', 'raw', '8e3b6f50013721547cd1cfa9f2d61ad15781536e320dce2a393a66377b285bed'),
-      (473, 1, 'Im1', 49, 33, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'fbd5ede4dfd2e223fcb40f57d821e01445fda8b33868421bd4d218f4d8d4ab99'),
-      (474, 0, 'Im1', 50, 34, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6c2d514ab60bd62e2118a5c29ad01909118e7a895efe6f6b907347e7845ef5c4'),
-      (474, 0, 'Im2', 50, 34, 'DeviceGray', 8, 'FlateDecode', 'raw', 'eeffe559c89b4e213c279b8cd1b970a17894725c74752b1ac9f0b5ef8c3c2a6e'),
-      (474, 1, 'Im1', 50, 34, 'ImageMask', 1, 'FlateDecode', 'raw', '7f5932bc4f5637df9878fc2d18b2679a22bdc4ee12198372c669bddfcf462a64'),
-      (475, 0, 'Im1', 51, 35, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '83ffcfbd48374ab45bd0bac35f6adc1fa6f6f7b9f7de6b1e715190be9849449f'),
-      (475, 0, 'Im2', 51, 35, 'DeviceGray', 8, 'FlateDecode', 'raw', '6b0928bc76b1e6a0568c38e6e07a18645b938453431424e23f6f6302aa78fdc7'),
-      (475, 1, 'Im1', 51, 35, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '83ffcfbd48374ab45bd0bac35f6adc1fa6f6f7b9f7de6b1e715190be9849449f'),
-      (476, 0, 'Im1', 52, 36, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '512ad37a45393d9fa48d5f9c4275b9e1654a656c1e727b4e3d976f20fb9f8a1b'),
-      (476, 0, 'Im2', 52, 36, 'DeviceGray', 8, 'FlateDecode', 'raw', '774807b390d83a6da5833554a69ab78051d1f096c3963d3f08349a37d4d7c023'),
-      (476, 1, 'Im1', 52, 36, 'DeviceRGB', 8, 'FlateDecode', 'raw', '9ef8cce3a0fbbddb9aa4b39fa4c9c27c7ab0df7228dc13da404f003fcd8c6a3e'),
-      (476, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (477, 0, 'Im1', 53, 37, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6996c3e29632d6215ea0e0385060da410ca8ce9c158ad21a90d318988b4d8c51'),
-      (477, 0, 'Im2', 53, 37, 'DeviceGray', 8, 'FlateDecode', 'raw', 'c59956e1d445de2fba4962fb887632f477357e48ed6183beb833781128eeddcb'),
-      (477, 1, 'Im1', 53, 37, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'f0c32860daacd70afbbcc412875d0e9cdd705a5feb38ac168012b04109815622'),
-      (478, 0, 'Im1', 54, 38, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '580c5d4a9f43de39dd2b6ea7a48df094e4e38831604f87c27ae98e75c9d67917'),
-      (478, 0, 'Im2', 54, 38, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e2a2d128f0b4a976d5240b68f76f31f855b86d422fd06013373d5ac88efa2a38'),
-      (478, 1, 'Im1', 54, 38, 'ImageMask', 1, 'FlateDecode', 'raw', 'd19ea9c49561e0d7b0cf5e78904e61293352084d70b107561251bc6b4674bb6b'),
-      (479, 0, 'Im1', 55, 39, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '6a5e1d26dbe16828788fb965d0f8d49ba14d2fa51b3a201f792b9c28a07de648'),
-      (479, 0, 'Im2', 55, 39, 'DeviceGray', 8, 'FlateDecode', 'raw', '705cb3fb72c458c2f0ff9e984b05b1295269db20319b65569795ac47b061b388'),
-      (479, 1, 'Im1', 55, 39, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '6a5e1d26dbe16828788fb965d0f8d49ba14d2fa51b3a201f792b9c28a07de648'),
-      (480, 0, 'Im1', 8, 8, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '8b232af7c0031bb381fa57a76b0d796724e711aa8120a476b11285dc1a14471d'),
-      (480, 0, 'Im2', 8, 8, 'DeviceGray', 8, 'FlateDecode', 'raw', '83e9de66615f339b10c9e90b786bb201119d1f54480a56ac3b0f18ab5ea58b42'),
-      (480, 1, 'Im1', 8, 8, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c5690ddb86e14a2297e88640f7f9b0fc0fe0bee348bf90706e32ffe5984611ee'),
-      (481, 0, 'Im1', 9, 9, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '90f598e03db5579e9c9d25c5d56108286275f48af616df1adf96f4b1acdabb61'),
-      (481, 0, 'Im2', 9, 9, 'DeviceGray', 8, 'FlateDecode', 'raw', '6d02803a1d81027b2039a4ba85a297611b074e4db84fe312b3ef7ddfd5b723e4'),
-      (481, 1, 'Im1', 9, 9, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'c2b64ee7eb8868bf5bd83d378399d75aca3c0649693049e69ab1e920fa88e1af'),
-      (482, 0, 'Im1', 10, 10, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9e3f927196cdd97a7464d6bc0ae50475b34c152f28e5dd15f11b4bc72a6cc0aa'),
-      (482, 0, 'Im2', 10, 10, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ade78c0b0ddb7e373a1da55a9b3788f764f59d699e2a6e7e4cbaf9d796ddadc4'),
-      (482, 1, 'Im1', 10, 10, 'ImageMask', 1, 'FlateDecode', 'raw', '7c47594709ff7b1bb6fe625e47ef4e5c5e4cebd165b1c4a7f9b8fb35be162b7f'),
-      (483, 0, 'Im1', 11, 11, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '4631a2c310fb7dba2c5476c7cb2929ed127f4f04afa6eda6d87e116b60c6ab4f'),
-      (483, 0, 'Im2', 11, 11, 'DeviceGray', 8, 'FlateDecode', 'raw', 'da4dd103f73a3c1bbff3e478b88dd6c1be95f16ae5ccd0cd711e8c677c2ce7c9'),
-      (483, 1, 'Im1', 11, 11, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '4631a2c310fb7dba2c5476c7cb2929ed127f4f04afa6eda6d87e116b60c6ab4f'),
-      (483, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (484, 0, 'Im1', 12, 12, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd455cd89f2ea5ab7283edc90b526935ee5129fd02c3e34d1575ad0dbc3681f60'),
-      (484, 0, 'Im2', 12, 12, 'DeviceGray', 8, 'FlateDecode', 'raw', 'a62d3b4d51427d54f9a1d5c753965e2d13ed2b6d8f8561deb8272fad30c1dbb5'),
-      (484, 1, 'Im1', 12, 12, 'DeviceRGB', 8, 'FlateDecode', 'raw', '25bc58fca37ebb812006fd2ea355e98ca393cc12b8e925b7868cb5acac067c32'),
-      (485, 0, 'Im1', 13, 13, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '49abfe0920ae4094f13490e6497c7cbec09195242520b24719a98ccda942fada'),
-      (485, 0, 'Im2', 13, 13, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd46fb0977696c066a53fd3ead9441aee83ec274314ebcc17ffac6e8f98d39baa'),
-      (485, 1, 'Im1', 13, 13, 'DeviceRGB', 8, 'FlateDecode', 'raw', '24a0dbebb6394fc99dd0d753f923290a1cd91438f1a95f31127ec4e6f03b8c60'),
-      (486, 0, 'Im1', 14, 14, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'd67945963ac4d10eb4ab8fb33eafc5d1674d1a135fa6be1a3e4d4ddbb0bd37fc'),
-      (486, 0, 'Im2', 14, 14, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b363cd96217b808cfb396525e632ad801454492ef34fb54cf01551b38acba6e8'),
-      (486, 1, 'Im1', 14, 14, 'ImageMask', 1, 'FlateDecode', 'raw', 'd904e1f1e028ba9058a128a6fd724f0f9892ae8fe49c8f7dc2613183f7f8bbca'),
-      (487, 0, 'Im1', 15, 15, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '803c7b7b5518682d544eca05ced8496b9bd82ed00ae7c0c804d5a9f637563304'),
-      (487, 0, 'Im2', 15, 15, 'DeviceGray', 8, 'FlateDecode', 'raw', '4af07731b1764e73e5bf808bd87827462c898220af57cc796e86e5b02733c742'),
-      (487, 1, 'Im1', 15, 15, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '803c7b7b5518682d544eca05ced8496b9bd82ed00ae7c0c804d5a9f637563304'),
-      (488, 0, 'Im1', 16, 16, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'ac22797cd467b53e7b8158debc394e0133f72c48efb730cae8cacdd358716a74'),
-      (488, 0, 'Im2', 16, 16, 'DeviceGray', 8, 'FlateDecode', 'raw', 'e166ee1604d58239e86fb7cf8617e9295570a89cf52a93e0183d2250ef6a1d29'),
-      (488, 1, 'Im1', 16, 16, 'DeviceRGB', 8, 'FlateDecode', 'raw', '99173ebb1fe2bb3720ec2a954837c50de584f9041a0980edda88371ba986886b'),
-      (489, 0, 'Im1', 17, 17, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '7d240df85e7e9936b2b6c484214020bf109260e05f0a2ca8ef4763b98b08e61d'),
-      (489, 0, 'Im2', 17, 17, 'DeviceGray', 8, 'FlateDecode', 'raw', '6a199113118209baf306a489409fc30c58818101a8dfe6426d80f0f5ab063409'),
-      (489, 1, 'Im1', 17, 17, 'DeviceRGB', 8, 'FlateDecode', 'raw', 'e1fb9b4a357a38c2c771fdd4221b0bc21663581f65356c20455790e847b8c3d6'),
-      (490, 0, 'Im1', 18, 18, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '92645f024e20ea75072a371afb927d38486a51a28159305aed7b7417b7a7ec7a'),
-      (490, 0, 'Im2', 18, 18, 'DeviceGray', 8, 'FlateDecode', 'raw', 'dc74065b0501102c4ae3da5092e31c3e0d7c8c448a52ebc6f220f8da0c1d3b80'),
-      (490, 1, 'Im1', 18, 18, 'ImageMask', 1, 'FlateDecode', 'raw', '6b211dc77c7d9d1cbb90cbac69d44037a577f04d6b521f5a6f9b3508bc48b7f2'),
-      (490, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (491, 0, 'Im1', 19, 19, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'adf802575c80b87b4352cf47620857346b73f522bb9ebbb7889dd8bc531c3767'),
-      (491, 0, 'Im2', 19, 19, 'DeviceGray', 8, 'FlateDecode', 'raw', '106b31f8360a262db688fee9b9b1f2443de1be36dba6b13366c2eca903e91875'),
-      (491, 1, 'Im1', 19, 19, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', 'adf802575c80b87b4352cf47620857346b73f522bb9ebbb7889dd8bc531c3767'),
-      (492, 0, 'Im1', 20, 20, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2ec4f875f5a74305c73460bffa524e3c74283f8eba016d6163a96494cde321ce'),
-      (492, 0, 'Im2', 20, 20, 'DeviceGray', 8, 'FlateDecode', 'raw', '96261d40e3945654e07717c31a7ef2e7e510a374ad4b7d087d09786af8676f85'),
-      (492, 1, 'Im1', 20, 20, 'DeviceRGB', 8, 'FlateDecode', 'raw', '547ddd76ea222e621e376cdb4cf36a6aeaf23d4117fc2283e60b7ad6702457a9'),
-      (493, 0, 'Im1', 21, 21, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'a46e106b8102343bc83347c5b2580a16d3b95cc10b17a6c6ed0b4b74bf295f35'),
-      (493, 0, 'Im2', 21, 21, 'DeviceGray', 8, 'FlateDecode', 'raw', '1715c3cee9abbcd870491022c9161f01a4bb5a521e522a26e5491d5aa4f9f367'),
-      (493, 1, 'Im1', 21, 21, 'DeviceRGB', 8, 'FlateDecode', 'raw', '4b36923d6c23fa6ad7fc3d32eb32c8345f7b1861a6965bc7b6d7c5d7c15beb79'),
-      (494, 0, 'Im1', 22, 22, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '178edaec24ebdd649d3ca9e67192f80f5a37ab39bb458a1043a06ed2a6e461d2'),
-      (494, 0, 'Im2', 22, 22, 'DeviceGray', 8, 'FlateDecode', 'raw', 'b19276ad5a98c26989798af180cd724def0057a66da8f540a4eb36a0e41ad4e5'),
-      (494, 1, 'Im1', 22, 22, 'ImageMask', 1, 'FlateDecode', 'raw', '458e610b78a382db508ca7db1f0c0ba1360f5649ace4747a319174ac921cf1b8'),
-      (495, 0, 'Im1', 23, 23, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '2de73649d5d015032932e7759af8cdf4be574098123fee1b23dc6d6bf0c4f9a7'),
-      (495, 0, 'Im2', 23, 23, 'DeviceGray', 8, 'FlateDecode', 'raw', '705847d0fbc2666a81dc746f018d3c9d3da05bbe63d1b4948e5361113ed78b11'),
-      (495, 1, 'Im1', 23, 23, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '2de73649d5d015032932e7759af8cdf4be574098123fee1b23dc6d6bf0c4f9a7'),
-      (496, 0, 'Im1', 24, 24, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '35e3d04f9b029b14a4469e1bbeca924ca7b77f82c0b79b275dc2803ece820e6c'),
-      (496, 0, 'Im2', 24, 24, 'DeviceGray', 8, 'FlateDecode', 'raw', 'd583fa634f392870721ed99d6f77d0328c406240bae2da64c865a4f838329450'),
-      (496, 1, 'Im1', 24, 24, 'DeviceRGB', 8, 'FlateDecode', 'raw', '5c1c3987c72e819422531b4602bc90dffde4ed5e341b34ef97092591ebff8205'),
-      (497, 0, 'Im1', 25, 25, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', 'edb74b675f8c0105a36152194d4b0037ee49ef122aecfa1c3b643f9a09251be9'),
-      (497, 0, 'Im2', 25, 25, 'DeviceGray', 8, 'FlateDecode', 'raw', 'ab1231f39eaa87c6cdbfc18e2b17217024f609d5f83b283dad1391317d76f1a7'),
-      (497, 1, 'Im1', 25, 25, 'DeviceRGB', 8, 'FlateDecode', 'raw', '7e9423b6fed7f8c9f24ff493fbb75e90b2f819ed71f3cf84ad8880b9c0281d87'),
-      (497, 1, 'Im9', 8, 8, 'DeviceGray', 1, 'CCITTFaxDecode', 'unsupported', None),
-      (498, 0, 'Im1', 26, 26, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '1891be0775013652f6feb3e7115d577295711b1a20b3e41750a996b5c61e672e'),
-      (498, 0, 'Im2', 26, 26, 'DeviceGray', 8, 'FlateDecode', 'raw', '9b87df65571e06c61b5d20b5e79610e930af139674ab8bc7f17aefa4571d0636'),
-      (498, 1, 'Im1', 26, 26, 'ImageMask', 1, 'FlateDecode', 'raw', '01c757d0b4e30e32c376a35aad54ae035f3796adf2a3887bce7bd36de5b9ddcb'),
-      (499, 0, 'Im1', 27, 27, 'DeviceRGB', 8, 'DCTDecode', 'jpeg', '9a2a7f79cbb4a3391409c7715931cfb88f6343638eae42e2242b4d6080a11c1e'),
-      (499, 0, 'Im2', 27, 27, 'DeviceGray', 8, 'FlateDecode', 'raw', '77719a47e5f8ad11087904196e52ba21dfd484417f904080c712ed4c25387869'),
-      (499, 1, 'Im1', 27, 27, 'DeviceRGB', 8, 'ASCII85Decode+DCTDecode', 'jpeg', '9a2a7f79cbb4a3391409c7715931cfb88f6343638eae42e2242b4d6080a11c1e'),
-    ],
-  },
-  'q_favicon': {
-    153156: [
-      (0, 0, 'bmp', 8, 8, '069cfda8c7639a3d7f24acf85d858ef2516968ca516046f9987ff35176a132f1'),
-      (0, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (0, 2, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (1, 0, 'bmp', 9, 9, '8e6d7fccbd98ceabb43b307270f9d1b2cd659cee87000ebec027fa4ab3af712b'),
-      (2, 0, 'bmp', 10, 10, '6489a7a2e16574509b40972488e779ac8eeba8a0cd57d99acf20e493096fd092'),
-      (2, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (3, 0, 'bmp', 11, 11, 'bea3e28d65eea8d364f5413b9433c9918d5ae0c378fd4b70f9c1e43f0aa87729'),
-      (4, 0, 'bmp', 12, 12, 'a8ab3db38471b305fcc6b9986d1488b826725254602e8f3868c5c5bfa00ca02e'),
-      (4, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (5, 0, 'bmp', 13, 13, '4d49a0439d6f798057cdbfdc23c5f35afbf2068ba5d57f65260152259ea0944e'),
-      (5, 1, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (6, 0, 'bmp', 14, 14, '7f6c34fea6529525ed7fe206c4b34db2b76a7b8ee9d257d51c8698181fe0d5c1'),
-      (6, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (7, 0, 'bmp', 15, 15, 'c4199eb92f0dc482de9af932d76b677d8ffce53e0deb5d35c89e958e2526e88e'),
-      (8, 0, 'bmp', 16, 16, 'da86c9930ff5ae34564525d8fcbed06f98b47aaf8aa67b476836d016129b61bc'),
-      (8, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (9, 0, 'bmp', 17, 17, '87242fc3d4a7999aaa7bd75652aa413bdb05cddf544d92a3daec8b7ff2c85324'),
-      (10, 0, 'bmp', 18, 18, '60cc9337cd2dba452774790e1280fb58aa7a675d3fbee7fab5ae8266a1a02509'),
-      (10, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (10, 2, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (11, 0, 'bmp', 19, 19, '4b71cb93a342a056af70f95b504e4cacecfb9708639df2e11b6153723da88e44'),
-      (12, 0, 'bmp', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (12, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (13, 0, 'bmp', 21, 21, 'e7169c46cafe27bb0ab2835735cf8b730c6d435d43db34247ac56e9debdf0305'),
-      (14, 0, 'bmp', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (14, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (15, 0, 'bmp', 23, 23, 'c23258bb4801fc64e56703792410cb07369929b9c2cfc9448aeffb9245da8544'),
-      (15, 1, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (16, 0, 'bmp', 8, 8, '71288e069b17f6521247d5715896308f6b9137bdfe52e42eac16b925ef639b59'),
-      (16, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (17, 0, 'bmp', 9, 9, '338e6e5e89c0404a8780ea5a804d60b2835f7f2df5c56dbc52fea2cc967a5c1c'),
-      (18, 0, 'bmp', 10, 10, '03302d0c754f12a61ce3b22bbd57310f723bc867fb2bdb26c70282be7de4e516'),
-      (18, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (19, 0, 'bmp', 11, 11, 'd77cca2f9469cecdecb982d8cd605e37a2ed6ba7bedbb6ac059723abca4cd388'),
-      (20, 0, 'bmp', 12, 12, '8f56855cffd4af7857ab539f5f422fade63cc34336785ec03888914aef6c08cb'),
-      (20, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (20, 2, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (21, 0, 'bmp', 13, 13, '564c935d0c14584cc12b33c1c7c435c868d72ce88eb5aa2cef8cde5c44f22539'),
-      (22, 0, 'bmp', 14, 14, '12f1a45b98817a9a8c98d041aad75385c891a54653f771ab67185574ef1afe1a'),
-      (22, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (23, 0, 'bmp', 15, 15, '41112aaf8aee044458aba60ec5fbc0a28ca4a6ae098facb72473a8cee1489c0a'),
-      (24, 0, 'bmp', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (24, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (25, 0, 'bmp', 17, 17, 'a46199de211a6eb8230adc46f636a8e511a780088c6265b9f4e6596bbf647c8c'),
-      (25, 1, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (26, 0, 'bmp', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (26, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (27, 0, 'bmp', 19, 19, 'cc71e0bb7e511f83b20712dfe3960e88e9962034143b4d90c3cc269c62089a50'),
-      (28, 0, 'bmp', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (28, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (29, 0, 'bmp', 21, 21, '7700710c3c0db7052cb89079b06dcd09c3fcc26abcf36f4c6a7e6b7564556233'),
-      (30, 0, 'bmp', 22, 22, 'cbf49f700382d1a54ea8ce46d4c7cd52eb93deaffc68debb358a4a20d5976c56'),
-      (30, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (30, 2, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (31, 0, 'bmp', 23, 23, '10d3072922bbc944cf6cf8fa977b0b25c12cd840a5d7d63ad993a8ee6e346a99'),
-      (32, 0, 'bmp', 8, 8, '874e5a624d06682411032b26ed4588e3c0bd6ea8e9d29f5ae77e40edc7bd2a94'),
-      (32, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (33, 0, 'bmp', 9, 9, '175a465b7ad63c4d965c0b8caff4c2d0b23feffdab6ace17da11b3dbd3b09d74'),
-      (34, 0, 'bmp', 10, 10, '8cb5a2f6b111de783ce73a41a660da582b7009c3c979b63dce51a54c6c3643f5'),
-      (34, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (35, 0, 'bmp', 11, 11, 'beddef1710d971aac7f01947027b8f8fa2764b9a1f9c31fdea3376debcf86d52'),
-      (35, 1, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (36, 0, 'bmp', 12, 12, '7e5c343efad934797fdbd9df913187a7e49848fd10910f98858ceedc710d428e'),
-      (36, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (37, 0, 'bmp', 13, 13, '58e18b3df777d5f92c725c1341d3c0b716ee097dbae7c59f3b9561c509b0a917'),
-      (38, 0, 'bmp', 14, 14, 'ff2a0fdfe294715ca8f983e1509924accbd43ae8f4d8392c8c21e0c54d089a92'),
-      (38, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (39, 0, 'bmp', 15, 15, 'c9289d8450634ebde230ee8bbd5a2f1ec29cfe2ffba340c4a14ad348e666f265'),
-      (40, 0, 'bmp', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (40, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (40, 2, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (41, 0, 'bmp', 17, 17, '0671e16461dd257f5817b006378136aa636484dc854cf5d737711c7e977d62c4'),
-      (42, 0, 'bmp', 18, 18, '9f620d0cf803bf731ec5058a87f4065dc8c6a71d1b7232b60020c597e11fc78c'),
-      (42, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (43, 0, 'bmp', 19, 19, '55fa44a354fca655fb6f1093db3a8b4856c1ce92732f4d8b8fa15278f0d475e3'),
-      (44, 0, 'bmp', 20, 20, 'de1c6f6451f9b875374f3eb1e747a20aae4af20426852813a8f7ebea5bb5a9d1'),
-      (44, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (45, 0, 'bmp', 21, 21, '07aae9a145818add59574453008e2be1e6119f6dcfcbc0cdfc0d81414a043193'),
-      (45, 1, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (46, 0, 'bmp', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (46, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (47, 0, 'bmp', 23, 23, 'dee3e16d6f8261055bad76d4f2e3488c133090d8e1ea68f8ecf3856c4af915e5'),
-      (48, 0, 'bmp', 8, 8, '5e8e08b9ee6da5f0ae870469f7c9b54976850da43711456681c5f8a54110b3f2'),
-      (48, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (49, 0, 'bmp', 9, 9, 'bf1b63cd2f8b2349fd7417b6732c6850f4e02eda6577daa97bcec9afaf09bf42'),
-      (50, 0, 'bmp', 10, 10, '7e65e8db3993736f4144186578fb69a4cc7397bfead33680cbbd72afdd970a93'),
-      (50, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (50, 2, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (51, 0, 'bmp', 11, 11, '3f9ca6d58b3d82adf23cdf83453f921f62f0968637ce5df833939992e5c9a691'),
-      (52, 0, 'bmp', 12, 12, 'a493407e2379dda0832cc7158d55440698f6afad65cb9b66792a6b840e956df0'),
-      (52, 1, 'png', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (53, 0, 'bmp', 13, 13, '98e60d313f0cc42ba55b0da01135e63309f05b56d507f6462081297e8c271170'),
-      (54, 0, 'bmp', 14, 14, 'a79b0274ff49f58eb31d9ba7cee35716efcb3394299377bbc571569e9f852cf1'),
-      (54, 1, 'png', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (55, 0, 'bmp', 15, 15, '9a00028e32e3a35b344a8d1ebda74150ee068505dd7580acfd557dd516907a3f'),
-      (55, 1, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (56, 0, 'bmp', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (56, 1, 'png', 24, 24, '96690ea8d20eb7c78dc6d72976292cdddf1da39fab76a6a3162b3f3689ad1630'),
-      (57, 0, 'bmp', 17, 17, '05536b658f11e698ea5d5e7239989f35e9a13d0e9b4a7cb635c01e92bd314a8b'),
-      (58, 0, 'bmp', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (58, 1, 'png', 26, 26, 'a782e1782e460375d340506b6dbcf6c448325c067f7a394dec57a9d820b896e4'),
-      (59, 0, 'bmp', 19, 19, 'e5d9aba837f713d30d3eb0cdce9f0a216809775c36167384fe8e13ff11682d3c'),
-      (60, 0, 'bmp', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (60, 1, 'png', 28, 28, '4f7a7eafef7bfe74ebdc2dccdf76001b90ca1a73212bd5dea7bb9808120e9f89'),
-      (60, 2, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (61, 0, 'bmp', 21, 21, 'd723ab7ee5596f67637fa0f9ef1e8f91d6fc7bee3d9c6d8d9fabee6b4213caab'),
-      (62, 0, 'bmp', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (62, 1, 'png', 30, 30, '619327d629e385c846479a8e63623efd604d9eae49cae31bac9f09843963950b'),
-      (63, 0, 'bmp', 23, 23, '86a71a721902290b1a1fc7da78a10932d0b26b6b2044dc8f5cff7d4a5ecf9549'),
-      (64, 0, 'bmp', 8, 8, '08110461458c37a2acb3fc9c00fca69b30113b83728fc727fe0db4dc611b00cd'),
-      (64, 1, 'png', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (65, 0, 'bmp', 9, 9, 'e30011ec5136c62cc39b318fc999cc3f8f80752ac06748dc4eeeaa0335c5f112'),
-      (65, 1, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (66, 0, 'bmp', 10, 10, '34b80c4ab949486bf89c6cd6383d0875cc95a61b112dc7cd123887fe33e4e345'),
-      (66, 1, 'png', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (67, 0, 'bmp', 11, 11, '135ae0746bc20a6a98930f2d8e5fcdb442a782b6d239114ad3a9c648ccf8b693'),
-      (68, 0, 'bmp', 12, 12, 'a0a88ea5ed5676df041352567dfe78c07d01ee3ab3cb31254fee690e70b7868c'),
-      (68, 1, 'png', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (69, 0, 'bmp', 13, 13, 'f8d6f42e81320e6525c2ce4059fafdb75babfd1646f4f02f0f2c8a708f427dcb'),
-      (70, 0, 'bmp', 14, 14, '372cfe82b6a66f83561e56848e99347f6ce057146711abb8d9219ca17614c035'),
-      (70, 1, 'png', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (70, 2, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (71, 0, 'bmp', 15, 15, 'fbec80be77b295acbd255ba58981b8cd501c9e8eb5f9eba3dce8729df7a16c3d'),
-      (72, 0, 'bmp', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (72, 1, 'png', 24, 24, '5c097639903c707fdd73d8163c9c8a69a414e42db9023fc23d713db39b7ae6fb'),
-      (73, 0, 'bmp', 17, 17, '79cea73fffdd12b627928361e1f72b24c059e24cfd6190e16da6b497f3cd3f80'),
-      (74, 0, 'bmp', 18, 18, 'f20c70ef0023645fa61bfed860b008fbac3b91c50ea9e59f95c99c0c1c57814a'),
-      (74, 1, 'png', 26, 26, '3a7a6b4e1ae3ef0602e41596a08f548c02b339b4ec35dcf025ddf32396a34941'),
-      (75, 0, 'bmp', 19, 19, '9855633caafbdf4b55379174d5f13b671be5a24de4d172cebd91d1671af1ba98'),
-      (75, 1, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (76, 0, 'bmp', 20, 20, '4768d99988e30ef8c6804cdd6675b953cacc9570e95a1c0cbd5d745a365f2b9c'),
-      (76, 1, 'png', 28, 28, '344dd0aecd088c0a76d0a80ec594df4adc3a7c278e0f1ff1e26716bc8e796033'),
-      (77, 0, 'bmp', 21, 21, '58d7ac1cfb7b961004aa47242df68058564b30618a1fb586ec9244d74f778e76'),
-      (78, 0, 'bmp', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (78, 1, 'png', 30, 30, '27490c1e8c824119890e20b7e65e7dcfcaa8cf46a54926cde7b8b229854fae41'),
-      (79, 0, 'bmp', 23, 23, '5159fca5ec8b7473bf34632aaa6a78d42a5621279001ff77304eb21eb24e540f'),
-      (80, 0, 'bmp', 8, 8, '22743d7aba4912dcf9337079bf5a835a4e11baaf1c4067df0ec87036b55fc8bf'),
-      (80, 1, 'png', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (80, 2, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (81, 0, 'bmp', 9, 9, '623ab224375236067d633d3667ad6a172e81c1cbc508e2ad06c4c372a838adf3'),
-      (82, 0, 'bmp', 10, 10, '6a93ec685193a038f5dd65c7bca3c4ff67d45b863f7902c6ad904d48d3112121'),
-      (82, 1, 'png', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (83, 0, 'bmp', 11, 11, 'a9071749e44a5cba74a11ce0e9bc4c2e77cb561c3ffd74ca9106a0f4b3359214'),
-      (84, 0, 'bmp', 12, 12, 'ca8e8dba97ca8ee10638b9a817b7ebde84038e000fc349095f9359827c859206'),
-      (84, 1, 'png', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (85, 0, 'bmp', 13, 13, '00fb5104578b0b065d9342c6d78a488e46e57d955f11eccdb39f6d9546ba4902'),
-      (85, 1, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (86, 0, 'bmp', 14, 14, 'caedecf12ae93096c209d34eeeefac97bfda6a423851bb2ccb91e51de6236e92'),
-      (86, 1, 'png', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (87, 0, 'bmp', 15, 15, '221d73fd8c82f4fea909060027038251d9b4bf52ebca2ba62c2ebd93150a35f9'),
-      (88, 0, 'bmp', 16, 16, 'fa1223db30cfbdd39d2cbadc03e770f3eadf3a02a474de7b3e1e4eb66e1f52a3'),
-      (88, 1, 'png', 24, 24, '7c8b2d4f4b1782b1ea50304d23f86a1d6f9b73865a779cc4c4838c4ac3a59a6e'),
-      (89, 0, 'bmp', 17, 17, '08b138e55b2056d5f686052aea6030f2116a98a30080accbaef2eccc7f652106'),
-      (90, 0, 'bmp', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (90, 1, 'png', 26, 26, 'acd9a543b0733d1fa210d61fd88110d274e94e1efdb32772022f5a5f7c71ebd3'),
-      (90, 2, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (91, 0, 'bmp', 19, 19, 'e248343c4316f2e6dc1c26539ceb89ca9ba3ff8d3974d4bf99ad5786e54c61fc'),
-      (92, 0, 'bmp', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (92, 1, 'png', 28, 28, 'edcdfa048ea6d38d4e688a870c0deb1a5698d8207cecef2df6e2ffc3086b4de2'),
-      (93, 0, 'bmp', 21, 21, '3add5ac1074d1c3a07df2bc89a91ad23386b163af438ecb90bfe3a27e23a68b1'),
-      (94, 0, 'bmp', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (94, 1, 'png', 30, 30, '73a3b61306c276beef12776fb166ca13e33a4db553d4aa2fd94465bf2a4e6333'),
-      (95, 0, 'bmp', 23, 23, '47a40e3261737f692faa248d2db6d8762c835e64b11574b1459dd57288998aa7'),
-      (95, 1, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (96, 0, 'bmp', 8, 8, '1697584868a5ebc80dd9c992258bd033f233dbdfd5bdb6d0074c9a3de4895584'),
-      (96, 1, 'png', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (97, 0, 'bmp', 9, 9, 'ef4423cff00e53555c0be088db4c3bdc5390b1218428c6b833aa4d744f101fec'),
-      (98, 0, 'bmp', 10, 10, 'ba28d6de74d9a2b40d12e7e79975737f32712457fa5ac5d18a66cb9f71ea75cc'),
-      (98, 1, 'png', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (99, 0, 'bmp', 11, 11, '9a59234f82501f3579ec5728ba8ced4e2ae4ed8e8187c992546e562afd80330b'),
-      (100, 0, 'bmp', 12, 12, 'e5110943a93807d1deb2fbf0b8d6c10a4adec63b9be2c6e5d2427924ed7cae3b'),
-      (100, 1, 'png', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (100, 2, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (101, 0, 'bmp', 13, 13, '7dec995b8aad9bda9d341ddc1d7fafc4f66d19b782c0cec3cdc44e6a2bf4f98c'),
-      (102, 0, 'bmp', 14, 14, 'e18934118c2e74281ad49f651a66a9d48b4c1c36874b11fac60be5882f9217e6'),
-      (102, 1, 'png', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (103, 0, 'bmp', 15, 15, 'dbd6cf0c43e0582924a320002827225c06fe79f73ba704484a6cd700908b62c1'),
-      (104, 0, 'bmp', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (104, 1, 'png', 24, 24, '62300dd458f130aec9056bfa3b74cbded4b2fcb34c8026b2a19c2a4541afb967'),
-      (105, 0, 'bmp', 17, 17, 'debf84b9957bd7ea70a9e380517e217e0fd0470c14ad8b52eb19c8d2b1d622e2'),
-      (105, 1, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (106, 0, 'bmp', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (106, 1, 'png', 26, 26, '6a117d7c0921ddf045de677c567f96c8c357407d939d5a8cb7501b6fc0980705'),
-      (107, 0, 'bmp', 19, 19, '1b8b067a98a9109fcc967df364f929b5f6a5001ccd9769a4cadbd18e3a9c461d'),
-      (108, 0, 'bmp', 20, 20, 'c03470985af840d9fc82905c60065a802766226903c738adb68631630ab3fb99'),
-      (108, 1, 'png', 28, 28, '4e71c116e20fd2f3032973fdf04b3640eb3d466f89b76a19d58f403614aca0e2'),
-      (109, 0, 'bmp', 21, 21, '62ee8c56a31dbd897793dd3d1556ab6119afa596df1b993d7112df1add06cd1b'),
-      (110, 0, 'bmp', 22, 22, 'f4eb1c2a2630260cd4dd9f03672ebf137419e65738ab96027a6a14e0ca9257d1'),
-      (110, 1, 'png', 30, 30, '3dc3dc421fb86254b1795cf2c45375037353cfe8118891011bdef31cd579da2c'),
-      (110, 2, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (111, 0, 'bmp', 23, 23, 'f0c35053017cfd416af840e020f550283bb5df3ea8788ad0d29cd46ee511029a'),
-      (112, 0, 'bmp', 8, 8, 'b6d969c4aed4371f4d343bea874ca81e1a5491a280fcfbaa999d8bb4abef51b8'),
-      (112, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (113, 0, 'bmp', 9, 9, 'b084b58c8d215868c587e6cb2526ab13a938198251088a7a31602f7c19a6e65d'),
-      (114, 0, 'bmp', 10, 10, 'cc044dbb47968714e2af67794b40484e2a0a09efa340b69d7aea733d4999ef17'),
-      (114, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (115, 0, 'bmp', 11, 11, 'ed54d2d82a7a9c4593c894f8ba611f3f69a8fb60e49721bcc1541b1e82341f73'),
-      (115, 1, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (116, 0, 'bmp', 12, 12, '6c930520969bf42a475bee30d7e6e2426d7ab3d8204ab1c7fdf583b0f5ccc49e'),
-      (116, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (117, 0, 'bmp', 13, 13, '177065014847be83b9d949694cc3bf2eec6baedc7f1776c4f2ff227e4eb9df73'),
-      (118, 0, 'bmp', 14, 14, '490aedd3f7e5039e43a7c0e8d79212dc00ce27ccd66d0a7801b96cd69bcac260'),
-      (118, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (119, 0, 'bmp', 15, 15, 'a9e9661f9e2f0ee77b3911f2e7bba08708a5da10f56fe48ad224863c619ca914'),
-      (120, 0, 'bmp', 16, 16, '152cec2f9a8b9eba63634b0365bd006be1b0c0d1aa3a685f05adacee63f79b8b'),
-      (120, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (120, 2, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (121, 0, 'bmp', 17, 17, '66bb486da93d15bec029309a47aeed3b012c486f3c1b1e6e7378177b368d98f2'),
-      (122, 0, 'bmp', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (122, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (123, 0, 'bmp', 19, 19, 'f59d6e514e32a74313f2d42c58d2e05f4dba7c24669a4cddbaaf27e30d92fe4a'),
-      (124, 0, 'bmp', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (124, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (125, 0, 'bmp', 21, 21, 'bff0069543398b616610ee94c0aac20033cafea6cbd0f1442437dc2bee06272a'),
-      (125, 1, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (126, 0, 'bmp', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (126, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (127, 0, 'bmp', 23, 23, 'd318d18af78a730e8caea728e6d7d49d3acaed501885f059b8dfbe7a1ca0d0f4'),
-      (128, 0, 'bmp', 8, 8, '0d37d34a76dce11f2abb585ffdc1ca8678e11108954a4ea65a6a58273b2a3b7b'),
-      (128, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (129, 0, 'bmp', 9, 9, 'e71402f03b19e6b3fd74efa1dd42ec79755017445abd19b6274c0645e208d55f'),
-      (130, 0, 'bmp', 10, 10, 'dc6d29506c18452f5553085d2180ef3a09af97236a5806e85d5109b52bf1a99e'),
-      (130, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (130, 2, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (131, 0, 'bmp', 11, 11, 'fda48a00ddfcc19bc136aaca5e047ccf8fed82c95886fc4538c15991ac366676'),
-      (132, 0, 'bmp', 12, 12, '972693347cd0f05e3042ceb9340704863c292651f355dc5071f31ca84b01d4a4'),
-      (132, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (133, 0, 'bmp', 13, 13, '98e3655dbff81e40787f33402107d51f6595a664034caad27d3b1d2770746b5f'),
-      (134, 0, 'bmp', 14, 14, 'b127aae44ddda382bd2597f1c7ccfdbcf5b1a234b8f9f3d7a929c907c1374ea2'),
-      (134, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (135, 0, 'bmp', 15, 15, 'fa707f76b4540ef4f9209ec52971e1680935745496874c68b9a516f852e04517'),
-      (135, 1, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (136, 0, 'bmp', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (136, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (137, 0, 'bmp', 17, 17, '952fce4c5028c749d51d29121f55ac2803c2cdde6d012a514eb49dce6e1ea90a'),
-      (138, 0, 'bmp', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (138, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (139, 0, 'bmp', 19, 19, '7eec444c83989db49958cd693b71337683259a34e9f51d6b10d3bfdfe2f6b8e9'),
-      (140, 0, 'bmp', 20, 20, '8dcd5e3fe9259afcd4f1defe8d7d3e345da6c6035cb9350ed6d7716d203321cf'),
-      (140, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (140, 2, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (141, 0, 'bmp', 21, 21, 'a376d66a0d97824c411de54ef657b48a06c50b7b9e19e9fec7e96f0b586783f1'),
-      (142, 0, 'bmp', 22, 22, 'e9d6040ac9d2258a01f5d6e691c2b4addea78e67164fa61e6a724a0d35aa47c3'),
-      (142, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (143, 0, 'bmp', 23, 23, '79770f050285fbec1b8f067150baf852633e80b54dfb0bdc18aeb4afb2c7db80'),
-      (144, 0, 'bmp', 8, 8, '9c35871ec98e27d110ff1c7abb7e490be9455625aba8878316e477629f581438'),
-      (144, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (145, 0, 'bmp', 9, 9, '275bb996498b534a90bde28564667c70d0881fcfab78739d9c941dc48da34e4c'),
-      (145, 1, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (146, 0, 'bmp', 10, 10, '06b9e48c807013f44bea00adba7a1d815a84aaf129eb52d115da64a97c692b0b'),
-      (146, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (147, 0, 'bmp', 11, 11, 'c15ce141397fa95e2966182bf8c25dfba87a7202ce7d4615446d1bc83c600acb'),
-      (148, 0, 'bmp', 12, 12, 'a350a7eb2abfed4d8298ad20b640b79d28d818c13b95e05638bdbe930abc062d'),
-      (148, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (149, 0, 'bmp', 13, 13, '827d59dd1fe9b4b9d63d9e19bbfd8ab9ae49d315b9d9dcb7fa0b88de987c8f4b'),
-      (150, 0, 'bmp', 14, 14, 'ef4e9f35080c8026af0cb7c2bc943147c34a6b83a931e1691470cb12c9dc12f0'),
-      (150, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (150, 2, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (151, 0, 'bmp', 15, 15, 'dad3d64829a91d3927896c85caae62481211c04909f9966c2b75d11a6eca0ce8'),
-      (152, 0, 'bmp', 16, 16, '249f73282696c34852883f182488bd0b14a8c4f5f8f63c5a183c7b01b8da7eb9'),
-      (152, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (153, 0, 'bmp', 17, 17, '34d310537bd5b5d5733d2c2b340a20ca46981a55b1454f2a8868b64ee851dc2d'),
-      (154, 0, 'bmp', 18, 18, '7e756e671cea36f202cce81fbe1e3946f8462b6db752550bb0181163b4b3ffc2'),
-      (154, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (155, 0, 'bmp', 19, 19, 'b820b4c604f8f8df07ce233ed6de67ccd7b7a43133ea69e63531be4dc72fda74'),
-      (155, 1, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (156, 0, 'bmp', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (156, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (157, 0, 'bmp', 21, 21, 'e9f64da99fae8f669369c1c3b9961f68cf910e3a8071c51cea88d678046a49bc'),
-      (158, 0, 'bmp', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (158, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (159, 0, 'bmp', 23, 23, 'f96136caa6ec85c4195276192e13d749e90a380990ee25ac7c9005fef08aa39d'),
-      (160, 0, 'bmp', 8, 8, '3f422fc324271194410107be4b4e2834d3538b9188499181046f80925e4079ba'),
-      (160, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (160, 2, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (161, 0, 'bmp', 9, 9, '6ea0caa302375e011846b7109d6f7a9892cfedb8d506dffa4e6263ead45459d1'),
-      (162, 0, 'bmp', 10, 10, '6c60c0dbd00cbd9169425d44fa0f02f1c587be6bf8edc555e9651bb426a56a46'),
-      (162, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (163, 0, 'bmp', 11, 11, 'cde73da2e96ebe2a311a79d3d32abee76075d5d08ca8cf13cfe9b6ad9ce63d96'),
-      (164, 0, 'bmp', 12, 12, 'be7504b36de4acb076e17d46148178b2a39947f91a65893e02536e10e0ed4e63'),
-      (164, 1, 'png', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (165, 0, 'bmp', 13, 13, 'fa33e1749bc99a894ea89223aa3a19890ffcd7cdb7ebb3448f0e671b4c5a7fba'),
-      (165, 1, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (166, 0, 'bmp', 14, 14, 'dae0e6e3c35932c12ad693b879cfaeb0b45fcac23d828dad7bda012b564fe134'),
-      (166, 1, 'png', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (167, 0, 'bmp', 15, 15, '191afedf2ba23200d46c045449a9a613dd11b042781c57c31211cfd9b9f48051'),
-      (168, 0, 'bmp', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (168, 1, 'png', 24, 24, '96690ea8d20eb7c78dc6d72976292cdddf1da39fab76a6a3162b3f3689ad1630'),
-      (169, 0, 'bmp', 17, 17, 'c91428c0b1ef1cf14fbdea946fe0f071ccaa898b987f7eccc02080d3a31044a4'),
-      (170, 0, 'bmp', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (170, 1, 'png', 26, 26, 'a782e1782e460375d340506b6dbcf6c448325c067f7a394dec57a9d820b896e4'),
-      (170, 2, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (171, 0, 'bmp', 19, 19, '7cf73e594308d96c652b708690133f5ba87c7f09abec64f90fccbd32f6938121'),
-      (172, 0, 'bmp', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (172, 1, 'png', 28, 28, '4f7a7eafef7bfe74ebdc2dccdf76001b90ca1a73212bd5dea7bb9808120e9f89'),
-      (173, 0, 'bmp', 21, 21, '2546160fc545cdb08dbb1725a779b24d1b147b9a994a8c0725847bb55b23801f'),
-      (174, 0, 'bmp', 22, 22, '6aeb8387c63660c985f5593a9240ff711bda7a6d710ef12314779d7fa8c7a487'),
-      (174, 1, 'png', 30, 30, '619327d629e385c846479a8e63623efd604d9eae49cae31bac9f09843963950b'),
-      (175, 0, 'bmp', 23, 23, '82f7f88a3affdccf2ec705d6e7dff46a0bb0b158d38a23f1cc926ee3ecebc735'),
-      (175, 1, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (176, 0, 'bmp', 8, 8, '069cfda8c7639a3d7f24acf85d858ef2516968ca516046f9987ff35176a132f1'),
-      (176, 1, 'png', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (177, 0, 'bmp', 9, 9, '8e6d7fccbd98ceabb43b307270f9d1b2cd659cee87000ebec027fa4ab3af712b'),
-      (178, 0, 'bmp', 10, 10, '6489a7a2e16574509b40972488e779ac8eeba8a0cd57d99acf20e493096fd092'),
-      (178, 1, 'png', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (179, 0, 'bmp', 11, 11, 'bea3e28d65eea8d364f5413b9433c9918d5ae0c378fd4b70f9c1e43f0aa87729'),
-      (180, 0, 'bmp', 12, 12, 'a8ab3db38471b305fcc6b9986d1488b826725254602e8f3868c5c5bfa00ca02e'),
-      (180, 1, 'png', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (180, 2, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (181, 0, 'bmp', 13, 13, '4d49a0439d6f798057cdbfdc23c5f35afbf2068ba5d57f65260152259ea0944e'),
-      (182, 0, 'bmp', 14, 14, '7f6c34fea6529525ed7fe206c4b34db2b76a7b8ee9d257d51c8698181fe0d5c1'),
-      (182, 1, 'png', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (183, 0, 'bmp', 15, 15, 'c4199eb92f0dc482de9af932d76b677d8ffce53e0deb5d35c89e958e2526e88e'),
-      (184, 0, 'bmp', 16, 16, 'da86c9930ff5ae34564525d8fcbed06f98b47aaf8aa67b476836d016129b61bc'),
-      (184, 1, 'png', 24, 24, '5c097639903c707fdd73d8163c9c8a69a414e42db9023fc23d713db39b7ae6fb'),
-      (185, 0, 'bmp', 17, 17, '87242fc3d4a7999aaa7bd75652aa413bdb05cddf544d92a3daec8b7ff2c85324'),
-      (185, 1, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (186, 0, 'bmp', 18, 18, '60cc9337cd2dba452774790e1280fb58aa7a675d3fbee7fab5ae8266a1a02509'),
-      (186, 1, 'png', 26, 26, '3a7a6b4e1ae3ef0602e41596a08f548c02b339b4ec35dcf025ddf32396a34941'),
-      (187, 0, 'bmp', 19, 19, '4b71cb93a342a056af70f95b504e4cacecfb9708639df2e11b6153723da88e44'),
-      (188, 0, 'bmp', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (188, 1, 'png', 28, 28, '344dd0aecd088c0a76d0a80ec594df4adc3a7c278e0f1ff1e26716bc8e796033'),
-      (189, 0, 'bmp', 21, 21, 'e7169c46cafe27bb0ab2835735cf8b730c6d435d43db34247ac56e9debdf0305'),
-      (190, 0, 'bmp', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (190, 1, 'png', 30, 30, '27490c1e8c824119890e20b7e65e7dcfcaa8cf46a54926cde7b8b229854fae41'),
-      (190, 2, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (191, 0, 'bmp', 23, 23, 'c23258bb4801fc64e56703792410cb07369929b9c2cfc9448aeffb9245da8544'),
-      (192, 0, 'bmp', 8, 8, '71288e069b17f6521247d5715896308f6b9137bdfe52e42eac16b925ef639b59'),
-      (192, 1, 'png', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (193, 0, 'bmp', 9, 9, '338e6e5e89c0404a8780ea5a804d60b2835f7f2df5c56dbc52fea2cc967a5c1c'),
-      (194, 0, 'bmp', 10, 10, '03302d0c754f12a61ce3b22bbd57310f723bc867fb2bdb26c70282be7de4e516'),
-      (194, 1, 'png', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (195, 0, 'bmp', 11, 11, 'd77cca2f9469cecdecb982d8cd605e37a2ed6ba7bedbb6ac059723abca4cd388'),
-      (195, 1, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (196, 0, 'bmp', 12, 12, '8f56855cffd4af7857ab539f5f422fade63cc34336785ec03888914aef6c08cb'),
-      (196, 1, 'png', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (197, 0, 'bmp', 13, 13, '564c935d0c14584cc12b33c1c7c435c868d72ce88eb5aa2cef8cde5c44f22539'),
-      (198, 0, 'bmp', 14, 14, '12f1a45b98817a9a8c98d041aad75385c891a54653f771ab67185574ef1afe1a'),
-      (198, 1, 'png', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (199, 0, 'bmp', 15, 15, '41112aaf8aee044458aba60ec5fbc0a28ca4a6ae098facb72473a8cee1489c0a'),
-      (200, 0, 'bmp', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (200, 1, 'png', 24, 24, '7c8b2d4f4b1782b1ea50304d23f86a1d6f9b73865a779cc4c4838c4ac3a59a6e'),
-      (200, 2, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (201, 0, 'bmp', 17, 17, 'a46199de211a6eb8230adc46f636a8e511a780088c6265b9f4e6596bbf647c8c'),
-      (202, 0, 'bmp', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (202, 1, 'png', 26, 26, 'acd9a543b0733d1fa210d61fd88110d274e94e1efdb32772022f5a5f7c71ebd3'),
-      (203, 0, 'bmp', 19, 19, 'cc71e0bb7e511f83b20712dfe3960e88e9962034143b4d90c3cc269c62089a50'),
-      (204, 0, 'bmp', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (204, 1, 'png', 28, 28, 'edcdfa048ea6d38d4e688a870c0deb1a5698d8207cecef2df6e2ffc3086b4de2'),
-      (205, 0, 'bmp', 21, 21, '7700710c3c0db7052cb89079b06dcd09c3fcc26abcf36f4c6a7e6b7564556233'),
-      (205, 1, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (206, 0, 'bmp', 22, 22, 'cbf49f700382d1a54ea8ce46d4c7cd52eb93deaffc68debb358a4a20d5976c56'),
-      (206, 1, 'png', 30, 30, '73a3b61306c276beef12776fb166ca13e33a4db553d4aa2fd94465bf2a4e6333'),
-      (207, 0, 'bmp', 23, 23, '10d3072922bbc944cf6cf8fa977b0b25c12cd840a5d7d63ad993a8ee6e346a99'),
-      (208, 0, 'bmp', 8, 8, '874e5a624d06682411032b26ed4588e3c0bd6ea8e9d29f5ae77e40edc7bd2a94'),
-      (208, 1, 'png', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (209, 0, 'bmp', 9, 9, '175a465b7ad63c4d965c0b8caff4c2d0b23feffdab6ace17da11b3dbd3b09d74'),
-      (210, 0, 'bmp', 10, 10, '8cb5a2f6b111de783ce73a41a660da582b7009c3c979b63dce51a54c6c3643f5'),
-      (210, 1, 'png', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (210, 2, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (211, 0, 'bmp', 11, 11, 'beddef1710d971aac7f01947027b8f8fa2764b9a1f9c31fdea3376debcf86d52'),
-      (212, 0, 'bmp', 12, 12, '7e5c343efad934797fdbd9df913187a7e49848fd10910f98858ceedc710d428e'),
-      (212, 1, 'png', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (213, 0, 'bmp', 13, 13, '58e18b3df777d5f92c725c1341d3c0b716ee097dbae7c59f3b9561c509b0a917'),
-      (214, 0, 'bmp', 14, 14, 'ff2a0fdfe294715ca8f983e1509924accbd43ae8f4d8392c8c21e0c54d089a92'),
-      (214, 1, 'png', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (215, 0, 'bmp', 15, 15, 'c9289d8450634ebde230ee8bbd5a2f1ec29cfe2ffba340c4a14ad348e666f265'),
-      (215, 1, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (216, 0, 'bmp', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (216, 1, 'png', 24, 24, '62300dd458f130aec9056bfa3b74cbded4b2fcb34c8026b2a19c2a4541afb967'),
-      (217, 0, 'bmp', 17, 17, '0671e16461dd257f5817b006378136aa636484dc854cf5d737711c7e977d62c4'),
-      (218, 0, 'bmp', 18, 18, '9f620d0cf803bf731ec5058a87f4065dc8c6a71d1b7232b60020c597e11fc78c'),
-      (218, 1, 'png', 26, 26, '6a117d7c0921ddf045de677c567f96c8c357407d939d5a8cb7501b6fc0980705'),
-      (219, 0, 'bmp', 19, 19, '55fa44a354fca655fb6f1093db3a8b4856c1ce92732f4d8b8fa15278f0d475e3'),
-      (220, 0, 'bmp', 20, 20, 'de1c6f6451f9b875374f3eb1e747a20aae4af20426852813a8f7ebea5bb5a9d1'),
-      (220, 1, 'png', 28, 28, '4e71c116e20fd2f3032973fdf04b3640eb3d466f89b76a19d58f403614aca0e2'),
-      (220, 2, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (221, 0, 'bmp', 21, 21, '07aae9a145818add59574453008e2be1e6119f6dcfcbc0cdfc0d81414a043193'),
-      (222, 0, 'bmp', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (222, 1, 'png', 30, 30, '3dc3dc421fb86254b1795cf2c45375037353cfe8118891011bdef31cd579da2c'),
-      (223, 0, 'bmp', 23, 23, 'dee3e16d6f8261055bad76d4f2e3488c133090d8e1ea68f8ecf3856c4af915e5'),
-      (224, 0, 'bmp', 8, 8, '5e8e08b9ee6da5f0ae870469f7c9b54976850da43711456681c5f8a54110b3f2'),
-      (224, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (225, 0, 'bmp', 9, 9, 'bf1b63cd2f8b2349fd7417b6732c6850f4e02eda6577daa97bcec9afaf09bf42'),
-      (225, 1, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (226, 0, 'bmp', 10, 10, '7e65e8db3993736f4144186578fb69a4cc7397bfead33680cbbd72afdd970a93'),
-      (226, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (227, 0, 'bmp', 11, 11, '3f9ca6d58b3d82adf23cdf83453f921f62f0968637ce5df833939992e5c9a691'),
-      (228, 0, 'bmp', 12, 12, 'a493407e2379dda0832cc7158d55440698f6afad65cb9b66792a6b840e956df0'),
-      (228, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (229, 0, 'bmp', 13, 13, '98e60d313f0cc42ba55b0da01135e63309f05b56d507f6462081297e8c271170'),
-      (230, 0, 'bmp', 14, 14, 'a79b0274ff49f58eb31d9ba7cee35716efcb3394299377bbc571569e9f852cf1'),
-      (230, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (230, 2, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (231, 0, 'bmp', 15, 15, '9a00028e32e3a35b344a8d1ebda74150ee068505dd7580acfd557dd516907a3f'),
-      (232, 0, 'bmp', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (232, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (233, 0, 'bmp', 17, 17, '05536b658f11e698ea5d5e7239989f35e9a13d0e9b4a7cb635c01e92bd314a8b'),
-      (234, 0, 'bmp', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (234, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (235, 0, 'bmp', 19, 19, 'e5d9aba837f713d30d3eb0cdce9f0a216809775c36167384fe8e13ff11682d3c'),
-      (235, 1, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (236, 0, 'bmp', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (236, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (237, 0, 'bmp', 21, 21, 'd723ab7ee5596f67637fa0f9ef1e8f91d6fc7bee3d9c6d8d9fabee6b4213caab'),
-      (238, 0, 'bmp', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (238, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (239, 0, 'bmp', 23, 23, '86a71a721902290b1a1fc7da78a10932d0b26b6b2044dc8f5cff7d4a5ecf9549'),
-      (240, 0, 'bmp', 8, 8, '08110461458c37a2acb3fc9c00fca69b30113b83728fc727fe0db4dc611b00cd'),
-      (240, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (240, 2, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (241, 0, 'bmp', 9, 9, 'e30011ec5136c62cc39b318fc999cc3f8f80752ac06748dc4eeeaa0335c5f112'),
-      (242, 0, 'bmp', 10, 10, '34b80c4ab949486bf89c6cd6383d0875cc95a61b112dc7cd123887fe33e4e345'),
-      (242, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (243, 0, 'bmp', 11, 11, '135ae0746bc20a6a98930f2d8e5fcdb442a782b6d239114ad3a9c648ccf8b693'),
-      (244, 0, 'bmp', 12, 12, 'a0a88ea5ed5676df041352567dfe78c07d01ee3ab3cb31254fee690e70b7868c'),
-      (244, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (245, 0, 'bmp', 13, 13, 'f8d6f42e81320e6525c2ce4059fafdb75babfd1646f4f02f0f2c8a708f427dcb'),
-      (245, 1, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (246, 0, 'bmp', 14, 14, '372cfe82b6a66f83561e56848e99347f6ce057146711abb8d9219ca17614c035'),
-      (246, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (247, 0, 'bmp', 15, 15, 'fbec80be77b295acbd255ba58981b8cd501c9e8eb5f9eba3dce8729df7a16c3d'),
-      (248, 0, 'bmp', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (248, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (249, 0, 'bmp', 17, 17, '79cea73fffdd12b627928361e1f72b24c059e24cfd6190e16da6b497f3cd3f80'),
-      (250, 0, 'bmp', 18, 18, 'f20c70ef0023645fa61bfed860b008fbac3b91c50ea9e59f95c99c0c1c57814a'),
-      (250, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (250, 2, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (251, 0, 'bmp', 19, 19, '9855633caafbdf4b55379174d5f13b671be5a24de4d172cebd91d1671af1ba98'),
-      (252, 0, 'bmp', 20, 20, '4768d99988e30ef8c6804cdd6675b953cacc9570e95a1c0cbd5d745a365f2b9c'),
-      (252, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (253, 0, 'bmp', 21, 21, '58d7ac1cfb7b961004aa47242df68058564b30618a1fb586ec9244d74f778e76'),
-      (254, 0, 'bmp', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (254, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (255, 0, 'bmp', 23, 23, '5159fca5ec8b7473bf34632aaa6a78d42a5621279001ff77304eb21eb24e540f'),
-      (255, 1, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (256, 0, 'bmp', 8, 8, '22743d7aba4912dcf9337079bf5a835a4e11baaf1c4067df0ec87036b55fc8bf'),
-      (256, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (257, 0, 'bmp', 9, 9, '623ab224375236067d633d3667ad6a172e81c1cbc508e2ad06c4c372a838adf3'),
-      (258, 0, 'bmp', 10, 10, '6a93ec685193a038f5dd65c7bca3c4ff67d45b863f7902c6ad904d48d3112121'),
-      (258, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (259, 0, 'bmp', 11, 11, 'a9071749e44a5cba74a11ce0e9bc4c2e77cb561c3ffd74ca9106a0f4b3359214'),
-      (260, 0, 'bmp', 12, 12, 'ca8e8dba97ca8ee10638b9a817b7ebde84038e000fc349095f9359827c859206'),
-      (260, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (260, 2, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (261, 0, 'bmp', 13, 13, '00fb5104578b0b065d9342c6d78a488e46e57d955f11eccdb39f6d9546ba4902'),
-      (262, 0, 'bmp', 14, 14, 'caedecf12ae93096c209d34eeeefac97bfda6a423851bb2ccb91e51de6236e92'),
-      (262, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (263, 0, 'bmp', 15, 15, '221d73fd8c82f4fea909060027038251d9b4bf52ebca2ba62c2ebd93150a35f9'),
-      (264, 0, 'bmp', 16, 16, 'fa1223db30cfbdd39d2cbadc03e770f3eadf3a02a474de7b3e1e4eb66e1f52a3'),
-      (264, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (265, 0, 'bmp', 17, 17, '08b138e55b2056d5f686052aea6030f2116a98a30080accbaef2eccc7f652106'),
-      (265, 1, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (266, 0, 'bmp', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (266, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (267, 0, 'bmp', 19, 19, 'e248343c4316f2e6dc1c26539ceb89ca9ba3ff8d3974d4bf99ad5786e54c61fc'),
-      (268, 0, 'bmp', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (268, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (269, 0, 'bmp', 21, 21, '3add5ac1074d1c3a07df2bc89a91ad23386b163af438ecb90bfe3a27e23a68b1'),
-      (270, 0, 'bmp', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (270, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (270, 2, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (271, 0, 'bmp', 23, 23, '47a40e3261737f692faa248d2db6d8762c835e64b11574b1459dd57288998aa7'),
-      (272, 0, 'bmp', 8, 8, '1697584868a5ebc80dd9c992258bd033f233dbdfd5bdb6d0074c9a3de4895584'),
-      (272, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (273, 0, 'bmp', 9, 9, 'ef4423cff00e53555c0be088db4c3bdc5390b1218428c6b833aa4d744f101fec'),
-      (274, 0, 'bmp', 10, 10, 'ba28d6de74d9a2b40d12e7e79975737f32712457fa5ac5d18a66cb9f71ea75cc'),
-      (274, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (275, 0, 'bmp', 11, 11, '9a59234f82501f3579ec5728ba8ced4e2ae4ed8e8187c992546e562afd80330b'),
-      (275, 1, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (276, 0, 'bmp', 12, 12, 'e5110943a93807d1deb2fbf0b8d6c10a4adec63b9be2c6e5d2427924ed7cae3b'),
-      (276, 1, 'png', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (277, 0, 'bmp', 13, 13, '7dec995b8aad9bda9d341ddc1d7fafc4f66d19b782c0cec3cdc44e6a2bf4f98c'),
-      (278, 0, 'bmp', 14, 14, 'e18934118c2e74281ad49f651a66a9d48b4c1c36874b11fac60be5882f9217e6'),
-      (278, 1, 'png', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (279, 0, 'bmp', 15, 15, 'dbd6cf0c43e0582924a320002827225c06fe79f73ba704484a6cd700908b62c1'),
-      (280, 0, 'bmp', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (280, 1, 'png', 24, 24, '96690ea8d20eb7c78dc6d72976292cdddf1da39fab76a6a3162b3f3689ad1630'),
-      (280, 2, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (281, 0, 'bmp', 17, 17, 'debf84b9957bd7ea70a9e380517e217e0fd0470c14ad8b52eb19c8d2b1d622e2'),
-      (282, 0, 'bmp', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (282, 1, 'png', 26, 26, 'a782e1782e460375d340506b6dbcf6c448325c067f7a394dec57a9d820b896e4'),
-      (283, 0, 'bmp', 19, 19, '1b8b067a98a9109fcc967df364f929b5f6a5001ccd9769a4cadbd18e3a9c461d'),
-      (284, 0, 'bmp', 20, 20, 'c03470985af840d9fc82905c60065a802766226903c738adb68631630ab3fb99'),
-      (284, 1, 'png', 28, 28, '4f7a7eafef7bfe74ebdc2dccdf76001b90ca1a73212bd5dea7bb9808120e9f89'),
-      (285, 0, 'bmp', 21, 21, '62ee8c56a31dbd897793dd3d1556ab6119afa596df1b993d7112df1add06cd1b'),
-      (285, 1, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (286, 0, 'bmp', 22, 22, 'f4eb1c2a2630260cd4dd9f03672ebf137419e65738ab96027a6a14e0ca9257d1'),
-      (286, 1, 'png', 30, 30, '619327d629e385c846479a8e63623efd604d9eae49cae31bac9f09843963950b'),
-      (287, 0, 'bmp', 23, 23, 'f0c35053017cfd416af840e020f550283bb5df3ea8788ad0d29cd46ee511029a'),
-      (288, 0, 'bmp', 8, 8, 'b6d969c4aed4371f4d343bea874ca81e1a5491a280fcfbaa999d8bb4abef51b8'),
-      (288, 1, 'png', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (289, 0, 'bmp', 9, 9, 'b084b58c8d215868c587e6cb2526ab13a938198251088a7a31602f7c19a6e65d'),
-      (290, 0, 'bmp', 10, 10, 'cc044dbb47968714e2af67794b40484e2a0a09efa340b69d7aea733d4999ef17'),
-      (290, 1, 'png', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (290, 2, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (291, 0, 'bmp', 11, 11, 'ed54d2d82a7a9c4593c894f8ba611f3f69a8fb60e49721bcc1541b1e82341f73'),
-      (292, 0, 'bmp', 12, 12, '6c930520969bf42a475bee30d7e6e2426d7ab3d8204ab1c7fdf583b0f5ccc49e'),
-      (292, 1, 'png', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (293, 0, 'bmp', 13, 13, '177065014847be83b9d949694cc3bf2eec6baedc7f1776c4f2ff227e4eb9df73'),
-      (294, 0, 'bmp', 14, 14, '490aedd3f7e5039e43a7c0e8d79212dc00ce27ccd66d0a7801b96cd69bcac260'),
-      (294, 1, 'png', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (295, 0, 'bmp', 15, 15, 'a9e9661f9e2f0ee77b3911f2e7bba08708a5da10f56fe48ad224863c619ca914'),
-      (295, 1, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (296, 0, 'bmp', 16, 16, '152cec2f9a8b9eba63634b0365bd006be1b0c0d1aa3a685f05adacee63f79b8b'),
-      (296, 1, 'png', 24, 24, '5c097639903c707fdd73d8163c9c8a69a414e42db9023fc23d713db39b7ae6fb'),
-      (297, 0, 'bmp', 17, 17, '66bb486da93d15bec029309a47aeed3b012c486f3c1b1e6e7378177b368d98f2'),
-      (298, 0, 'bmp', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (298, 1, 'png', 26, 26, '3a7a6b4e1ae3ef0602e41596a08f548c02b339b4ec35dcf025ddf32396a34941'),
-      (299, 0, 'bmp', 19, 19, 'f59d6e514e32a74313f2d42c58d2e05f4dba7c24669a4cddbaaf27e30d92fe4a'),
-      (300, 0, 'bmp', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (300, 1, 'png', 28, 28, '344dd0aecd088c0a76d0a80ec594df4adc3a7c278e0f1ff1e26716bc8e796033'),
-      (300, 2, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (301, 0, 'bmp', 21, 21, 'bff0069543398b616610ee94c0aac20033cafea6cbd0f1442437dc2bee06272a'),
-      (302, 0, 'bmp', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (302, 1, 'png', 30, 30, '27490c1e8c824119890e20b7e65e7dcfcaa8cf46a54926cde7b8b229854fae41'),
-      (303, 0, 'bmp', 23, 23, 'd318d18af78a730e8caea728e6d7d49d3acaed501885f059b8dfbe7a1ca0d0f4'),
-      (304, 0, 'bmp', 8, 8, '0d37d34a76dce11f2abb585ffdc1ca8678e11108954a4ea65a6a58273b2a3b7b'),
-      (304, 1, 'png', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (305, 0, 'bmp', 9, 9, 'e71402f03b19e6b3fd74efa1dd42ec79755017445abd19b6274c0645e208d55f'),
-      (305, 1, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (306, 0, 'bmp', 10, 10, 'dc6d29506c18452f5553085d2180ef3a09af97236a5806e85d5109b52bf1a99e'),
-      (306, 1, 'png', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (307, 0, 'bmp', 11, 11, 'fda48a00ddfcc19bc136aaca5e047ccf8fed82c95886fc4538c15991ac366676'),
-      (308, 0, 'bmp', 12, 12, '972693347cd0f05e3042ceb9340704863c292651f355dc5071f31ca84b01d4a4'),
-      (308, 1, 'png', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (309, 0, 'bmp', 13, 13, '98e3655dbff81e40787f33402107d51f6595a664034caad27d3b1d2770746b5f'),
-      (310, 0, 'bmp', 14, 14, 'b127aae44ddda382bd2597f1c7ccfdbcf5b1a234b8f9f3d7a929c907c1374ea2'),
-      (310, 1, 'png', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (310, 2, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (311, 0, 'bmp', 15, 15, 'fa707f76b4540ef4f9209ec52971e1680935745496874c68b9a516f852e04517'),
-      (312, 0, 'bmp', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (312, 1, 'png', 24, 24, '7c8b2d4f4b1782b1ea50304d23f86a1d6f9b73865a779cc4c4838c4ac3a59a6e'),
-      (313, 0, 'bmp', 17, 17, '952fce4c5028c749d51d29121f55ac2803c2cdde6d012a514eb49dce6e1ea90a'),
-      (314, 0, 'bmp', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (314, 1, 'png', 26, 26, 'acd9a543b0733d1fa210d61fd88110d274e94e1efdb32772022f5a5f7c71ebd3'),
-      (315, 0, 'bmp', 19, 19, '7eec444c83989db49958cd693b71337683259a34e9f51d6b10d3bfdfe2f6b8e9'),
-      (315, 1, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (316, 0, 'bmp', 20, 20, '8dcd5e3fe9259afcd4f1defe8d7d3e345da6c6035cb9350ed6d7716d203321cf'),
-      (316, 1, 'png', 28, 28, 'edcdfa048ea6d38d4e688a870c0deb1a5698d8207cecef2df6e2ffc3086b4de2'),
-      (317, 0, 'bmp', 21, 21, 'a376d66a0d97824c411de54ef657b48a06c50b7b9e19e9fec7e96f0b586783f1'),
-      (318, 0, 'bmp', 22, 22, 'e9d6040ac9d2258a01f5d6e691c2b4addea78e67164fa61e6a724a0d35aa47c3'),
-      (318, 1, 'png', 30, 30, '73a3b61306c276beef12776fb166ca13e33a4db553d4aa2fd94465bf2a4e6333'),
-      (319, 0, 'bmp', 23, 23, '79770f050285fbec1b8f067150baf852633e80b54dfb0bdc18aeb4afb2c7db80'),
-      (320, 0, 'bmp', 8, 8, '9c35871ec98e27d110ff1c7abb7e490be9455625aba8878316e477629f581438'),
-      (320, 1, 'png', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (320, 2, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (321, 0, 'bmp', 9, 9, '275bb996498b534a90bde28564667c70d0881fcfab78739d9c941dc48da34e4c'),
-      (322, 0, 'bmp', 10, 10, '06b9e48c807013f44bea00adba7a1d815a84aaf129eb52d115da64a97c692b0b'),
-      (322, 1, 'png', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (323, 0, 'bmp', 11, 11, 'c15ce141397fa95e2966182bf8c25dfba87a7202ce7d4615446d1bc83c600acb'),
-      (324, 0, 'bmp', 12, 12, 'a350a7eb2abfed4d8298ad20b640b79d28d818c13b95e05638bdbe930abc062d'),
-      (324, 1, 'png', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (325, 0, 'bmp', 13, 13, '827d59dd1fe9b4b9d63d9e19bbfd8ab9ae49d315b9d9dcb7fa0b88de987c8f4b'),
-      (325, 1, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (326, 0, 'bmp', 14, 14, 'ef4e9f35080c8026af0cb7c2bc943147c34a6b83a931e1691470cb12c9dc12f0'),
-      (326, 1, 'png', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (327, 0, 'bmp', 15, 15, 'dad3d64829a91d3927896c85caae62481211c04909f9966c2b75d11a6eca0ce8'),
-      (328, 0, 'bmp', 16, 16, '249f73282696c34852883f182488bd0b14a8c4f5f8f63c5a183c7b01b8da7eb9'),
-      (328, 1, 'png', 24, 24, '62300dd458f130aec9056bfa3b74cbded4b2fcb34c8026b2a19c2a4541afb967'),
-      (329, 0, 'bmp', 17, 17, '34d310537bd5b5d5733d2c2b340a20ca46981a55b1454f2a8868b64ee851dc2d'),
-      (330, 0, 'bmp', 18, 18, '7e756e671cea36f202cce81fbe1e3946f8462b6db752550bb0181163b4b3ffc2'),
-      (330, 1, 'png', 26, 26, '6a117d7c0921ddf045de677c567f96c8c357407d939d5a8cb7501b6fc0980705'),
-      (330, 2, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (331, 0, 'bmp', 19, 19, 'b820b4c604f8f8df07ce233ed6de67ccd7b7a43133ea69e63531be4dc72fda74'),
-      (332, 0, 'bmp', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (332, 1, 'png', 28, 28, '4e71c116e20fd2f3032973fdf04b3640eb3d466f89b76a19d58f403614aca0e2'),
-      (333, 0, 'bmp', 21, 21, 'e9f64da99fae8f669369c1c3b9961f68cf910e3a8071c51cea88d678046a49bc'),
-      (334, 0, 'bmp', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (334, 1, 'png', 30, 30, '3dc3dc421fb86254b1795cf2c45375037353cfe8118891011bdef31cd579da2c'),
-      (335, 0, 'bmp', 23, 23, 'f96136caa6ec85c4195276192e13d749e90a380990ee25ac7c9005fef08aa39d'),
-      (335, 1, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (336, 0, 'bmp', 8, 8, '3f422fc324271194410107be4b4e2834d3538b9188499181046f80925e4079ba'),
-      (336, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (337, 0, 'bmp', 9, 9, '6ea0caa302375e011846b7109d6f7a9892cfedb8d506dffa4e6263ead45459d1'),
-      (338, 0, 'bmp', 10, 10, '6c60c0dbd00cbd9169425d44fa0f02f1c587be6bf8edc555e9651bb426a56a46'),
-      (338, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (339, 0, 'bmp', 11, 11, 'cde73da2e96ebe2a311a79d3d32abee76075d5d08ca8cf13cfe9b6ad9ce63d96'),
-      (340, 0, 'bmp', 12, 12, 'be7504b36de4acb076e17d46148178b2a39947f91a65893e02536e10e0ed4e63'),
-      (340, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (340, 2, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (341, 0, 'bmp', 13, 13, 'fa33e1749bc99a894ea89223aa3a19890ffcd7cdb7ebb3448f0e671b4c5a7fba'),
-      (342, 0, 'bmp', 14, 14, 'dae0e6e3c35932c12ad693b879cfaeb0b45fcac23d828dad7bda012b564fe134'),
-      (342, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (343, 0, 'bmp', 15, 15, '191afedf2ba23200d46c045449a9a613dd11b042781c57c31211cfd9b9f48051'),
-      (344, 0, 'bmp', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (344, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (345, 0, 'bmp', 17, 17, 'c91428c0b1ef1cf14fbdea946fe0f071ccaa898b987f7eccc02080d3a31044a4'),
-      (345, 1, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (346, 0, 'bmp', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (346, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (347, 0, 'bmp', 19, 19, '7cf73e594308d96c652b708690133f5ba87c7f09abec64f90fccbd32f6938121'),
-      (348, 0, 'bmp', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (348, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (349, 0, 'bmp', 21, 21, '2546160fc545cdb08dbb1725a779b24d1b147b9a994a8c0725847bb55b23801f'),
-      (350, 0, 'bmp', 22, 22, '6aeb8387c63660c985f5593a9240ff711bda7a6d710ef12314779d7fa8c7a487'),
-      (350, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (350, 2, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (351, 0, 'bmp', 23, 23, '82f7f88a3affdccf2ec705d6e7dff46a0bb0b158d38a23f1cc926ee3ecebc735'),
-      (352, 0, 'bmp', 8, 8, '069cfda8c7639a3d7f24acf85d858ef2516968ca516046f9987ff35176a132f1'),
-      (352, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (353, 0, 'bmp', 9, 9, '8e6d7fccbd98ceabb43b307270f9d1b2cd659cee87000ebec027fa4ab3af712b'),
-      (354, 0, 'bmp', 10, 10, '6489a7a2e16574509b40972488e779ac8eeba8a0cd57d99acf20e493096fd092'),
-      (354, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (355, 0, 'bmp', 11, 11, 'bea3e28d65eea8d364f5413b9433c9918d5ae0c378fd4b70f9c1e43f0aa87729'),
-      (355, 1, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (356, 0, 'bmp', 12, 12, 'a8ab3db38471b305fcc6b9986d1488b826725254602e8f3868c5c5bfa00ca02e'),
-      (356, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (357, 0, 'bmp', 13, 13, '4d49a0439d6f798057cdbfdc23c5f35afbf2068ba5d57f65260152259ea0944e'),
-      (358, 0, 'bmp', 14, 14, '7f6c34fea6529525ed7fe206c4b34db2b76a7b8ee9d257d51c8698181fe0d5c1'),
-      (358, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (359, 0, 'bmp', 15, 15, 'c4199eb92f0dc482de9af932d76b677d8ffce53e0deb5d35c89e958e2526e88e'),
-      (360, 0, 'bmp', 16, 16, 'da86c9930ff5ae34564525d8fcbed06f98b47aaf8aa67b476836d016129b61bc'),
-      (360, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (360, 2, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (361, 0, 'bmp', 17, 17, '87242fc3d4a7999aaa7bd75652aa413bdb05cddf544d92a3daec8b7ff2c85324'),
-      (362, 0, 'bmp', 18, 18, '60cc9337cd2dba452774790e1280fb58aa7a675d3fbee7fab5ae8266a1a02509'),
-      (362, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (363, 0, 'bmp', 19, 19, '4b71cb93a342a056af70f95b504e4cacecfb9708639df2e11b6153723da88e44'),
-      (364, 0, 'bmp', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (364, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (365, 0, 'bmp', 21, 21, 'e7169c46cafe27bb0ab2835735cf8b730c6d435d43db34247ac56e9debdf0305'),
-      (365, 1, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (366, 0, 'bmp', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (366, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (367, 0, 'bmp', 23, 23, 'c23258bb4801fc64e56703792410cb07369929b9c2cfc9448aeffb9245da8544'),
-      (368, 0, 'bmp', 8, 8, '71288e069b17f6521247d5715896308f6b9137bdfe52e42eac16b925ef639b59'),
-      (368, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (369, 0, 'bmp', 9, 9, '338e6e5e89c0404a8780ea5a804d60b2835f7f2df5c56dbc52fea2cc967a5c1c'),
-      (370, 0, 'bmp', 10, 10, '03302d0c754f12a61ce3b22bbd57310f723bc867fb2bdb26c70282be7de4e516'),
-      (370, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (370, 2, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (371, 0, 'bmp', 11, 11, 'd77cca2f9469cecdecb982d8cd605e37a2ed6ba7bedbb6ac059723abca4cd388'),
-      (372, 0, 'bmp', 12, 12, '8f56855cffd4af7857ab539f5f422fade63cc34336785ec03888914aef6c08cb'),
-      (372, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (373, 0, 'bmp', 13, 13, '564c935d0c14584cc12b33c1c7c435c868d72ce88eb5aa2cef8cde5c44f22539'),
-      (374, 0, 'bmp', 14, 14, '12f1a45b98817a9a8c98d041aad75385c891a54653f771ab67185574ef1afe1a'),
-      (374, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (375, 0, 'bmp', 15, 15, '41112aaf8aee044458aba60ec5fbc0a28ca4a6ae098facb72473a8cee1489c0a'),
-      (375, 1, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (376, 0, 'bmp', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (376, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (377, 0, 'bmp', 17, 17, 'a46199de211a6eb8230adc46f636a8e511a780088c6265b9f4e6596bbf647c8c'),
-      (378, 0, 'bmp', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (378, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (379, 0, 'bmp', 19, 19, 'cc71e0bb7e511f83b20712dfe3960e88e9962034143b4d90c3cc269c62089a50'),
-      (380, 0, 'bmp', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (380, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (380, 2, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (381, 0, 'bmp', 21, 21, '7700710c3c0db7052cb89079b06dcd09c3fcc26abcf36f4c6a7e6b7564556233'),
-      (382, 0, 'bmp', 22, 22, 'cbf49f700382d1a54ea8ce46d4c7cd52eb93deaffc68debb358a4a20d5976c56'),
-      (382, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (383, 0, 'bmp', 23, 23, '10d3072922bbc944cf6cf8fa977b0b25c12cd840a5d7d63ad993a8ee6e346a99'),
-      (384, 0, 'bmp', 8, 8, '874e5a624d06682411032b26ed4588e3c0bd6ea8e9d29f5ae77e40edc7bd2a94'),
-      (384, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (385, 0, 'bmp', 9, 9, '175a465b7ad63c4d965c0b8caff4c2d0b23feffdab6ace17da11b3dbd3b09d74'),
-      (385, 1, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (386, 0, 'bmp', 10, 10, '8cb5a2f6b111de783ce73a41a660da582b7009c3c979b63dce51a54c6c3643f5'),
-      (386, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (387, 0, 'bmp', 11, 11, 'beddef1710d971aac7f01947027b8f8fa2764b9a1f9c31fdea3376debcf86d52'),
-      (388, 0, 'bmp', 12, 12, '7e5c343efad934797fdbd9df913187a7e49848fd10910f98858ceedc710d428e'),
-      (388, 1, 'png', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (389, 0, 'bmp', 13, 13, '58e18b3df777d5f92c725c1341d3c0b716ee097dbae7c59f3b9561c509b0a917'),
-      (390, 0, 'bmp', 14, 14, 'ff2a0fdfe294715ca8f983e1509924accbd43ae8f4d8392c8c21e0c54d089a92'),
-      (390, 1, 'png', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (390, 2, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (391, 0, 'bmp', 15, 15, 'c9289d8450634ebde230ee8bbd5a2f1ec29cfe2ffba340c4a14ad348e666f265'),
-      (392, 0, 'bmp', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (392, 1, 'png', 24, 24, '96690ea8d20eb7c78dc6d72976292cdddf1da39fab76a6a3162b3f3689ad1630'),
-      (393, 0, 'bmp', 17, 17, '0671e16461dd257f5817b006378136aa636484dc854cf5d737711c7e977d62c4'),
-      (394, 0, 'bmp', 18, 18, '9f620d0cf803bf731ec5058a87f4065dc8c6a71d1b7232b60020c597e11fc78c'),
-      (394, 1, 'png', 26, 26, 'a782e1782e460375d340506b6dbcf6c448325c067f7a394dec57a9d820b896e4'),
-      (395, 0, 'bmp', 19, 19, '55fa44a354fca655fb6f1093db3a8b4856c1ce92732f4d8b8fa15278f0d475e3'),
-      (395, 1, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (396, 0, 'bmp', 20, 20, 'de1c6f6451f9b875374f3eb1e747a20aae4af20426852813a8f7ebea5bb5a9d1'),
-      (396, 1, 'png', 28, 28, '4f7a7eafef7bfe74ebdc2dccdf76001b90ca1a73212bd5dea7bb9808120e9f89'),
-      (397, 0, 'bmp', 21, 21, '07aae9a145818add59574453008e2be1e6119f6dcfcbc0cdfc0d81414a043193'),
-      (398, 0, 'bmp', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (398, 1, 'png', 30, 30, '619327d629e385c846479a8e63623efd604d9eae49cae31bac9f09843963950b'),
-      (399, 0, 'bmp', 23, 23, 'dee3e16d6f8261055bad76d4f2e3488c133090d8e1ea68f8ecf3856c4af915e5'),
-      (400, 0, 'bmp', 8, 8, '5e8e08b9ee6da5f0ae870469f7c9b54976850da43711456681c5f8a54110b3f2'),
-      (400, 1, 'png', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (400, 2, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (401, 0, 'bmp', 9, 9, 'bf1b63cd2f8b2349fd7417b6732c6850f4e02eda6577daa97bcec9afaf09bf42'),
-      (402, 0, 'bmp', 10, 10, '7e65e8db3993736f4144186578fb69a4cc7397bfead33680cbbd72afdd970a93'),
-      (402, 1, 'png', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (403, 0, 'bmp', 11, 11, '3f9ca6d58b3d82adf23cdf83453f921f62f0968637ce5df833939992e5c9a691'),
-      (404, 0, 'bmp', 12, 12, 'a493407e2379dda0832cc7158d55440698f6afad65cb9b66792a6b840e956df0'),
-      (404, 1, 'png', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (405, 0, 'bmp', 13, 13, '98e60d313f0cc42ba55b0da01135e63309f05b56d507f6462081297e8c271170'),
-      (405, 1, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (406, 0, 'bmp', 14, 14, 'a79b0274ff49f58eb31d9ba7cee35716efcb3394299377bbc571569e9f852cf1'),
-      (406, 1, 'png', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (407, 0, 'bmp', 15, 15, '9a00028e32e3a35b344a8d1ebda74150ee068505dd7580acfd557dd516907a3f'),
-      (408, 0, 'bmp', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (408, 1, 'png', 24, 24, '5c097639903c707fdd73d8163c9c8a69a414e42db9023fc23d713db39b7ae6fb'),
-      (409, 0, 'bmp', 17, 17, '05536b658f11e698ea5d5e7239989f35e9a13d0e9b4a7cb635c01e92bd314a8b'),
-      (410, 0, 'bmp', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (410, 1, 'png', 26, 26, '3a7a6b4e1ae3ef0602e41596a08f548c02b339b4ec35dcf025ddf32396a34941'),
-      (410, 2, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (411, 0, 'bmp', 19, 19, 'e5d9aba837f713d30d3eb0cdce9f0a216809775c36167384fe8e13ff11682d3c'),
-      (412, 0, 'bmp', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (412, 1, 'png', 28, 28, '344dd0aecd088c0a76d0a80ec594df4adc3a7c278e0f1ff1e26716bc8e796033'),
-      (413, 0, 'bmp', 21, 21, 'd723ab7ee5596f67637fa0f9ef1e8f91d6fc7bee3d9c6d8d9fabee6b4213caab'),
-      (414, 0, 'bmp', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (414, 1, 'png', 30, 30, '27490c1e8c824119890e20b7e65e7dcfcaa8cf46a54926cde7b8b229854fae41'),
-      (415, 0, 'bmp', 23, 23, '86a71a721902290b1a1fc7da78a10932d0b26b6b2044dc8f5cff7d4a5ecf9549'),
-      (415, 1, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (416, 0, 'bmp', 8, 8, '08110461458c37a2acb3fc9c00fca69b30113b83728fc727fe0db4dc611b00cd'),
-      (416, 1, 'png', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (417, 0, 'bmp', 9, 9, 'e30011ec5136c62cc39b318fc999cc3f8f80752ac06748dc4eeeaa0335c5f112'),
-      (418, 0, 'bmp', 10, 10, '34b80c4ab949486bf89c6cd6383d0875cc95a61b112dc7cd123887fe33e4e345'),
-      (418, 1, 'png', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (419, 0, 'bmp', 11, 11, '135ae0746bc20a6a98930f2d8e5fcdb442a782b6d239114ad3a9c648ccf8b693'),
-      (420, 0, 'bmp', 12, 12, 'a0a88ea5ed5676df041352567dfe78c07d01ee3ab3cb31254fee690e70b7868c'),
-      (420, 1, 'png', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (420, 2, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (421, 0, 'bmp', 13, 13, 'f8d6f42e81320e6525c2ce4059fafdb75babfd1646f4f02f0f2c8a708f427dcb'),
-      (422, 0, 'bmp', 14, 14, '372cfe82b6a66f83561e56848e99347f6ce057146711abb8d9219ca17614c035'),
-      (422, 1, 'png', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (423, 0, 'bmp', 15, 15, 'fbec80be77b295acbd255ba58981b8cd501c9e8eb5f9eba3dce8729df7a16c3d'),
-      (424, 0, 'bmp', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (424, 1, 'png', 24, 24, '7c8b2d4f4b1782b1ea50304d23f86a1d6f9b73865a779cc4c4838c4ac3a59a6e'),
-      (425, 0, 'bmp', 17, 17, '79cea73fffdd12b627928361e1f72b24c059e24cfd6190e16da6b497f3cd3f80'),
-      (425, 1, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (426, 0, 'bmp', 18, 18, 'f20c70ef0023645fa61bfed860b008fbac3b91c50ea9e59f95c99c0c1c57814a'),
-      (426, 1, 'png', 26, 26, 'acd9a543b0733d1fa210d61fd88110d274e94e1efdb32772022f5a5f7c71ebd3'),
-      (427, 0, 'bmp', 19, 19, '9855633caafbdf4b55379174d5f13b671be5a24de4d172cebd91d1671af1ba98'),
-      (428, 0, 'bmp', 20, 20, '4768d99988e30ef8c6804cdd6675b953cacc9570e95a1c0cbd5d745a365f2b9c'),
-      (428, 1, 'png', 28, 28, 'edcdfa048ea6d38d4e688a870c0deb1a5698d8207cecef2df6e2ffc3086b4de2'),
-      (429, 0, 'bmp', 21, 21, '58d7ac1cfb7b961004aa47242df68058564b30618a1fb586ec9244d74f778e76'),
-      (430, 0, 'bmp', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (430, 1, 'png', 30, 30, '73a3b61306c276beef12776fb166ca13e33a4db553d4aa2fd94465bf2a4e6333'),
-      (430, 2, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (431, 0, 'bmp', 23, 23, '5159fca5ec8b7473bf34632aaa6a78d42a5621279001ff77304eb21eb24e540f'),
-      (432, 0, 'bmp', 8, 8, '22743d7aba4912dcf9337079bf5a835a4e11baaf1c4067df0ec87036b55fc8bf'),
-      (432, 1, 'png', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (433, 0, 'bmp', 9, 9, '623ab224375236067d633d3667ad6a172e81c1cbc508e2ad06c4c372a838adf3'),
-      (434, 0, 'bmp', 10, 10, '6a93ec685193a038f5dd65c7bca3c4ff67d45b863f7902c6ad904d48d3112121'),
-      (434, 1, 'png', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (435, 0, 'bmp', 11, 11, 'a9071749e44a5cba74a11ce0e9bc4c2e77cb561c3ffd74ca9106a0f4b3359214'),
-      (435, 1, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (436, 0, 'bmp', 12, 12, 'ca8e8dba97ca8ee10638b9a817b7ebde84038e000fc349095f9359827c859206'),
-      (436, 1, 'png', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (437, 0, 'bmp', 13, 13, '00fb5104578b0b065d9342c6d78a488e46e57d955f11eccdb39f6d9546ba4902'),
-      (438, 0, 'bmp', 14, 14, 'caedecf12ae93096c209d34eeeefac97bfda6a423851bb2ccb91e51de6236e92'),
-      (438, 1, 'png', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (439, 0, 'bmp', 15, 15, '221d73fd8c82f4fea909060027038251d9b4bf52ebca2ba62c2ebd93150a35f9'),
-      (440, 0, 'bmp', 16, 16, 'fa1223db30cfbdd39d2cbadc03e770f3eadf3a02a474de7b3e1e4eb66e1f52a3'),
-      (440, 1, 'png', 24, 24, '62300dd458f130aec9056bfa3b74cbded4b2fcb34c8026b2a19c2a4541afb967'),
-      (440, 2, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (441, 0, 'bmp', 17, 17, '08b138e55b2056d5f686052aea6030f2116a98a30080accbaef2eccc7f652106'),
-      (442, 0, 'bmp', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (442, 1, 'png', 26, 26, '6a117d7c0921ddf045de677c567f96c8c357407d939d5a8cb7501b6fc0980705'),
-      (443, 0, 'bmp', 19, 19, 'e248343c4316f2e6dc1c26539ceb89ca9ba3ff8d3974d4bf99ad5786e54c61fc'),
-      (444, 0, 'bmp', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (444, 1, 'png', 28, 28, '4e71c116e20fd2f3032973fdf04b3640eb3d466f89b76a19d58f403614aca0e2'),
-      (445, 0, 'bmp', 21, 21, '3add5ac1074d1c3a07df2bc89a91ad23386b163af438ecb90bfe3a27e23a68b1'),
-      (445, 1, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (446, 0, 'bmp', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (446, 1, 'png', 30, 30, '3dc3dc421fb86254b1795cf2c45375037353cfe8118891011bdef31cd579da2c'),
-      (447, 0, 'bmp', 23, 23, '47a40e3261737f692faa248d2db6d8762c835e64b11574b1459dd57288998aa7'),
-      (448, 0, 'bmp', 8, 8, '1697584868a5ebc80dd9c992258bd033f233dbdfd5bdb6d0074c9a3de4895584'),
-      (448, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (449, 0, 'bmp', 9, 9, 'ef4423cff00e53555c0be088db4c3bdc5390b1218428c6b833aa4d744f101fec'),
-      (450, 0, 'bmp', 10, 10, 'ba28d6de74d9a2b40d12e7e79975737f32712457fa5ac5d18a66cb9f71ea75cc'),
-      (450, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (450, 2, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (451, 0, 'bmp', 11, 11, '9a59234f82501f3579ec5728ba8ced4e2ae4ed8e8187c992546e562afd80330b'),
-      (452, 0, 'bmp', 12, 12, 'e5110943a93807d1deb2fbf0b8d6c10a4adec63b9be2c6e5d2427924ed7cae3b'),
-      (452, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (453, 0, 'bmp', 13, 13, '7dec995b8aad9bda9d341ddc1d7fafc4f66d19b782c0cec3cdc44e6a2bf4f98c'),
-      (454, 0, 'bmp', 14, 14, 'e18934118c2e74281ad49f651a66a9d48b4c1c36874b11fac60be5882f9217e6'),
-      (454, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (455, 0, 'bmp', 15, 15, 'dbd6cf0c43e0582924a320002827225c06fe79f73ba704484a6cd700908b62c1'),
-      (455, 1, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (456, 0, 'bmp', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (456, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (457, 0, 'bmp', 17, 17, 'debf84b9957bd7ea70a9e380517e217e0fd0470c14ad8b52eb19c8d2b1d622e2'),
-      (458, 0, 'bmp', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (458, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (459, 0, 'bmp', 19, 19, '1b8b067a98a9109fcc967df364f929b5f6a5001ccd9769a4cadbd18e3a9c461d'),
-      (460, 0, 'bmp', 20, 20, 'c03470985af840d9fc82905c60065a802766226903c738adb68631630ab3fb99'),
-      (460, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (460, 2, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (461, 0, 'bmp', 21, 21, '62ee8c56a31dbd897793dd3d1556ab6119afa596df1b993d7112df1add06cd1b'),
-      (462, 0, 'bmp', 22, 22, 'f4eb1c2a2630260cd4dd9f03672ebf137419e65738ab96027a6a14e0ca9257d1'),
-      (462, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (463, 0, 'bmp', 23, 23, 'f0c35053017cfd416af840e020f550283bb5df3ea8788ad0d29cd46ee511029a'),
-      (464, 0, 'bmp', 8, 8, 'b6d969c4aed4371f4d343bea874ca81e1a5491a280fcfbaa999d8bb4abef51b8'),
-      (464, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (465, 0, 'bmp', 9, 9, 'b084b58c8d215868c587e6cb2526ab13a938198251088a7a31602f7c19a6e65d'),
-      (465, 1, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (466, 0, 'bmp', 10, 10, 'cc044dbb47968714e2af67794b40484e2a0a09efa340b69d7aea733d4999ef17'),
-      (466, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (467, 0, 'bmp', 11, 11, 'ed54d2d82a7a9c4593c894f8ba611f3f69a8fb60e49721bcc1541b1e82341f73'),
-      (468, 0, 'bmp', 12, 12, '6c930520969bf42a475bee30d7e6e2426d7ab3d8204ab1c7fdf583b0f5ccc49e'),
-      (468, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (469, 0, 'bmp', 13, 13, '177065014847be83b9d949694cc3bf2eec6baedc7f1776c4f2ff227e4eb9df73'),
-      (470, 0, 'bmp', 14, 14, '490aedd3f7e5039e43a7c0e8d79212dc00ce27ccd66d0a7801b96cd69bcac260'),
-      (470, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (470, 2, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (471, 0, 'bmp', 15, 15, 'a9e9661f9e2f0ee77b3911f2e7bba08708a5da10f56fe48ad224863c619ca914'),
-      (472, 0, 'bmp', 16, 16, '152cec2f9a8b9eba63634b0365bd006be1b0c0d1aa3a685f05adacee63f79b8b'),
-      (472, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (473, 0, 'bmp', 17, 17, '66bb486da93d15bec029309a47aeed3b012c486f3c1b1e6e7378177b368d98f2'),
-      (474, 0, 'bmp', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (474, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (475, 0, 'bmp', 19, 19, 'f59d6e514e32a74313f2d42c58d2e05f4dba7c24669a4cddbaaf27e30d92fe4a'),
-      (475, 1, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (476, 0, 'bmp', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (476, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (477, 0, 'bmp', 21, 21, 'bff0069543398b616610ee94c0aac20033cafea6cbd0f1442437dc2bee06272a'),
-      (478, 0, 'bmp', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (478, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (479, 0, 'bmp', 23, 23, 'd318d18af78a730e8caea728e6d7d49d3acaed501885f059b8dfbe7a1ca0d0f4'),
-      (480, 0, 'bmp', 8, 8, '0d37d34a76dce11f2abb585ffdc1ca8678e11108954a4ea65a6a58273b2a3b7b'),
-      (480, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (480, 2, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (481, 0, 'bmp', 9, 9, 'e71402f03b19e6b3fd74efa1dd42ec79755017445abd19b6274c0645e208d55f'),
-      (482, 0, 'bmp', 10, 10, 'dc6d29506c18452f5553085d2180ef3a09af97236a5806e85d5109b52bf1a99e'),
-      (482, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (483, 0, 'bmp', 11, 11, 'fda48a00ddfcc19bc136aaca5e047ccf8fed82c95886fc4538c15991ac366676'),
-      (484, 0, 'bmp', 12, 12, '972693347cd0f05e3042ceb9340704863c292651f355dc5071f31ca84b01d4a4'),
-      (484, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (485, 0, 'bmp', 13, 13, '98e3655dbff81e40787f33402107d51f6595a664034caad27d3b1d2770746b5f'),
-      (485, 1, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (486, 0, 'bmp', 14, 14, 'b127aae44ddda382bd2597f1c7ccfdbcf5b1a234b8f9f3d7a929c907c1374ea2'),
-      (486, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (487, 0, 'bmp', 15, 15, 'fa707f76b4540ef4f9209ec52971e1680935745496874c68b9a516f852e04517'),
-      (488, 0, 'bmp', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (488, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (489, 0, 'bmp', 17, 17, '952fce4c5028c749d51d29121f55ac2803c2cdde6d012a514eb49dce6e1ea90a'),
-      (490, 0, 'bmp', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (490, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (490, 2, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (491, 0, 'bmp', 19, 19, '7eec444c83989db49958cd693b71337683259a34e9f51d6b10d3bfdfe2f6b8e9'),
-      (492, 0, 'bmp', 20, 20, '8dcd5e3fe9259afcd4f1defe8d7d3e345da6c6035cb9350ed6d7716d203321cf'),
-      (492, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (493, 0, 'bmp', 21, 21, 'a376d66a0d97824c411de54ef657b48a06c50b7b9e19e9fec7e96f0b586783f1'),
-      (494, 0, 'bmp', 22, 22, 'e9d6040ac9d2258a01f5d6e691c2b4addea78e67164fa61e6a724a0d35aa47c3'),
-      (494, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (495, 0, 'bmp', 23, 23, '79770f050285fbec1b8f067150baf852633e80b54dfb0bdc18aeb4afb2c7db80'),
-      (495, 1, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (496, 0, 'bmp', 8, 8, '9c35871ec98e27d110ff1c7abb7e490be9455625aba8878316e477629f581438'),
-      (496, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (497, 0, 'bmp', 9, 9, '275bb996498b534a90bde28564667c70d0881fcfab78739d9c941dc48da34e4c'),
-      (498, 0, 'bmp', 10, 10, '06b9e48c807013f44bea00adba7a1d815a84aaf129eb52d115da64a97c692b0b'),
-      (498, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (499, 0, 'bmp', 11, 11, 'c15ce141397fa95e2966182bf8c25dfba87a7202ce7d4615446d1bc83c600acb'),
-    ],
-    149174: [
-      (0, 0, 'bmp', 8, 8, '069cfda8c7639a3d7f24acf85d858ef2516968ca516046f9987ff35176a132f1'),
-      (0, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (0, 2, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (1, 0, 'bmp', 9, 9, '8e6d7fccbd98ceabb43b307270f9d1b2cd659cee87000ebec027fa4ab3af712b'),
-      (2, 0, 'bmp', 10, 10, '6489a7a2e16574509b40972488e779ac8eeba8a0cd57d99acf20e493096fd092'),
-      (2, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (3, 0, 'bmp', 11, 11, 'bea3e28d65eea8d364f5413b9433c9918d5ae0c378fd4b70f9c1e43f0aa87729'),
-      (4, 0, 'bmp', 12, 12, 'a8ab3db38471b305fcc6b9986d1488b826725254602e8f3868c5c5bfa00ca02e'),
-      (4, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (5, 0, 'bmp', 13, 13, '4d49a0439d6f798057cdbfdc23c5f35afbf2068ba5d57f65260152259ea0944e'),
-      (5, 1, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (6, 0, 'bmp', 14, 14, '7f6c34fea6529525ed7fe206c4b34db2b76a7b8ee9d257d51c8698181fe0d5c1'),
-      (6, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (7, 0, 'bmp', 15, 15, 'c4199eb92f0dc482de9af932d76b677d8ffce53e0deb5d35c89e958e2526e88e'),
-      (8, 0, 'bmp', 16, 16, 'da86c9930ff5ae34564525d8fcbed06f98b47aaf8aa67b476836d016129b61bc'),
-      (8, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (9, 0, 'bmp', 17, 17, '87242fc3d4a7999aaa7bd75652aa413bdb05cddf544d92a3daec8b7ff2c85324'),
-      (10, 0, 'bmp', 18, 18, '60cc9337cd2dba452774790e1280fb58aa7a675d3fbee7fab5ae8266a1a02509'),
-      (10, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (10, 2, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (11, 0, 'bmp', 19, 19, '4b71cb93a342a056af70f95b504e4cacecfb9708639df2e11b6153723da88e44'),
-      (12, 0, 'bmp', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (12, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (13, 0, 'bmp', 21, 21, 'e7169c46cafe27bb0ab2835735cf8b730c6d435d43db34247ac56e9debdf0305'),
-      (14, 0, 'bmp', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (14, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (15, 0, 'bmp', 23, 23, 'c23258bb4801fc64e56703792410cb07369929b9c2cfc9448aeffb9245da8544'),
-      (15, 1, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (16, 0, 'bmp', 8, 8, '71288e069b17f6521247d5715896308f6b9137bdfe52e42eac16b925ef639b59'),
-      (16, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (17, 0, 'bmp', 9, 9, '338e6e5e89c0404a8780ea5a804d60b2835f7f2df5c56dbc52fea2cc967a5c1c'),
-      (18, 0, 'bmp', 10, 10, '03302d0c754f12a61ce3b22bbd57310f723bc867fb2bdb26c70282be7de4e516'),
-      (18, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (19, 0, 'bmp', 11, 11, 'd77cca2f9469cecdecb982d8cd605e37a2ed6ba7bedbb6ac059723abca4cd388'),
-      (20, 0, 'bmp', 12, 12, '8f56855cffd4af7857ab539f5f422fade63cc34336785ec03888914aef6c08cb'),
-      (20, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (20, 2, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (21, 0, 'bmp', 13, 13, '564c935d0c14584cc12b33c1c7c435c868d72ce88eb5aa2cef8cde5c44f22539'),
-      (22, 0, 'bmp', 14, 14, '12f1a45b98817a9a8c98d041aad75385c891a54653f771ab67185574ef1afe1a'),
-      (22, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (23, 0, 'bmp', 15, 15, '41112aaf8aee044458aba60ec5fbc0a28ca4a6ae098facb72473a8cee1489c0a'),
-      (24, 0, 'bmp', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (24, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (25, 0, 'bmp', 17, 17, 'a46199de211a6eb8230adc46f636a8e511a780088c6265b9f4e6596bbf647c8c'),
-      (25, 1, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (26, 0, 'bmp', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (26, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (27, 0, 'bmp', 19, 19, 'cc71e0bb7e511f83b20712dfe3960e88e9962034143b4d90c3cc269c62089a50'),
-      (28, 0, 'bmp', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (28, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (29, 0, 'bmp', 21, 21, '7700710c3c0db7052cb89079b06dcd09c3fcc26abcf36f4c6a7e6b7564556233'),
-      (30, 0, 'bmp', 22, 22, 'cbf49f700382d1a54ea8ce46d4c7cd52eb93deaffc68debb358a4a20d5976c56'),
-      (30, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (30, 2, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (31, 0, 'bmp', 23, 23, '10d3072922bbc944cf6cf8fa977b0b25c12cd840a5d7d63ad993a8ee6e346a99'),
-      (32, 0, 'bmp', 8, 8, '874e5a624d06682411032b26ed4588e3c0bd6ea8e9d29f5ae77e40edc7bd2a94'),
-      (32, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (33, 0, 'bmp', 9, 9, '175a465b7ad63c4d965c0b8caff4c2d0b23feffdab6ace17da11b3dbd3b09d74'),
-      (34, 0, 'bmp', 10, 10, '8cb5a2f6b111de783ce73a41a660da582b7009c3c979b63dce51a54c6c3643f5'),
-      (34, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (35, 0, 'bmp', 11, 11, 'beddef1710d971aac7f01947027b8f8fa2764b9a1f9c31fdea3376debcf86d52'),
-      (35, 1, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (36, 0, 'bmp', 12, 12, '7e5c343efad934797fdbd9df913187a7e49848fd10910f98858ceedc710d428e'),
-      (36, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (37, 0, 'bmp', 13, 13, '58e18b3df777d5f92c725c1341d3c0b716ee097dbae7c59f3b9561c509b0a917'),
-      (38, 0, 'bmp', 14, 14, 'ff2a0fdfe294715ca8f983e1509924accbd43ae8f4d8392c8c21e0c54d089a92'),
-      (38, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (39, 0, 'bmp', 15, 15, 'c9289d8450634ebde230ee8bbd5a2f1ec29cfe2ffba340c4a14ad348e666f265'),
-      (40, 0, 'bmp', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (40, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (40, 2, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (41, 0, 'bmp', 17, 17, '0671e16461dd257f5817b006378136aa636484dc854cf5d737711c7e977d62c4'),
-      (42, 0, 'bmp', 18, 18, '9f620d0cf803bf731ec5058a87f4065dc8c6a71d1b7232b60020c597e11fc78c'),
-      (42, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (43, 0, 'bmp', 19, 19, '55fa44a354fca655fb6f1093db3a8b4856c1ce92732f4d8b8fa15278f0d475e3'),
-      (44, 0, 'bmp', 20, 20, 'de1c6f6451f9b875374f3eb1e747a20aae4af20426852813a8f7ebea5bb5a9d1'),
-      (44, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (45, 0, 'bmp', 21, 21, '07aae9a145818add59574453008e2be1e6119f6dcfcbc0cdfc0d81414a043193'),
-      (45, 1, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (46, 0, 'bmp', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (46, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (47, 0, 'bmp', 23, 23, 'dee3e16d6f8261055bad76d4f2e3488c133090d8e1ea68f8ecf3856c4af915e5'),
-      (48, 0, 'bmp', 8, 8, '5e8e08b9ee6da5f0ae870469f7c9b54976850da43711456681c5f8a54110b3f2'),
-      (48, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (49, 0, 'bmp', 9, 9, 'bf1b63cd2f8b2349fd7417b6732c6850f4e02eda6577daa97bcec9afaf09bf42'),
-      (50, 0, 'bmp', 10, 10, '7e65e8db3993736f4144186578fb69a4cc7397bfead33680cbbd72afdd970a93'),
-      (50, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (50, 2, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (51, 0, 'bmp', 11, 11, '3f9ca6d58b3d82adf23cdf83453f921f62f0968637ce5df833939992e5c9a691'),
-      (52, 0, 'bmp', 12, 12, 'a493407e2379dda0832cc7158d55440698f6afad65cb9b66792a6b840e956df0'),
-      (52, 1, 'png', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (53, 0, 'bmp', 13, 13, '98e60d313f0cc42ba55b0da01135e63309f05b56d507f6462081297e8c271170'),
-      (54, 0, 'bmp', 14, 14, 'a79b0274ff49f58eb31d9ba7cee35716efcb3394299377bbc571569e9f852cf1'),
-      (54, 1, 'png', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (55, 0, 'bmp', 15, 15, '9a00028e32e3a35b344a8d1ebda74150ee068505dd7580acfd557dd516907a3f'),
-      (55, 1, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (56, 0, 'bmp', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (56, 1, 'png', 24, 24, '96690ea8d20eb7c78dc6d72976292cdddf1da39fab76a6a3162b3f3689ad1630'),
-      (57, 0, 'bmp', 17, 17, '05536b658f11e698ea5d5e7239989f35e9a13d0e9b4a7cb635c01e92bd314a8b'),
-      (58, 0, 'bmp', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (58, 1, 'png', 26, 26, 'a782e1782e460375d340506b6dbcf6c448325c067f7a394dec57a9d820b896e4'),
-      (59, 0, 'bmp', 19, 19, 'e5d9aba837f713d30d3eb0cdce9f0a216809775c36167384fe8e13ff11682d3c'),
-      (60, 0, 'bmp', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (60, 1, 'png', 28, 28, '4f7a7eafef7bfe74ebdc2dccdf76001b90ca1a73212bd5dea7bb9808120e9f89'),
-      (60, 2, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (61, 0, 'bmp', 21, 21, 'd723ab7ee5596f67637fa0f9ef1e8f91d6fc7bee3d9c6d8d9fabee6b4213caab'),
-      (62, 0, 'bmp', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (62, 1, 'png', 30, 30, '619327d629e385c846479a8e63623efd604d9eae49cae31bac9f09843963950b'),
-      (63, 0, 'bmp', 23, 23, '86a71a721902290b1a1fc7da78a10932d0b26b6b2044dc8f5cff7d4a5ecf9549'),
-      (64, 0, 'bmp', 8, 8, '08110461458c37a2acb3fc9c00fca69b30113b83728fc727fe0db4dc611b00cd'),
-      (64, 1, 'png', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (65, 0, 'bmp', 9, 9, 'e30011ec5136c62cc39b318fc999cc3f8f80752ac06748dc4eeeaa0335c5f112'),
-      (65, 1, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (66, 0, 'bmp', 10, 10, '34b80c4ab949486bf89c6cd6383d0875cc95a61b112dc7cd123887fe33e4e345'),
-      (66, 1, 'png', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (67, 0, 'bmp', 11, 11, '135ae0746bc20a6a98930f2d8e5fcdb442a782b6d239114ad3a9c648ccf8b693'),
-      (68, 0, 'bmp', 12, 12, 'a0a88ea5ed5676df041352567dfe78c07d01ee3ab3cb31254fee690e70b7868c'),
-      (68, 1, 'png', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (69, 0, 'bmp', 13, 13, 'f8d6f42e81320e6525c2ce4059fafdb75babfd1646f4f02f0f2c8a708f427dcb'),
-      (70, 0, 'bmp', 14, 14, '372cfe82b6a66f83561e56848e99347f6ce057146711abb8d9219ca17614c035'),
-      (70, 1, 'png', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (70, 2, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (71, 0, 'bmp', 15, 15, 'fbec80be77b295acbd255ba58981b8cd501c9e8eb5f9eba3dce8729df7a16c3d'),
-      (72, 0, 'bmp', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (72, 1, 'png', 24, 24, '5c097639903c707fdd73d8163c9c8a69a414e42db9023fc23d713db39b7ae6fb'),
-      (73, 0, 'bmp', 17, 17, '79cea73fffdd12b627928361e1f72b24c059e24cfd6190e16da6b497f3cd3f80'),
-      (74, 0, 'bmp', 18, 18, 'f20c70ef0023645fa61bfed860b008fbac3b91c50ea9e59f95c99c0c1c57814a'),
-      (74, 1, 'png', 26, 26, '3a7a6b4e1ae3ef0602e41596a08f548c02b339b4ec35dcf025ddf32396a34941'),
-      (75, 0, 'bmp', 19, 19, '9855633caafbdf4b55379174d5f13b671be5a24de4d172cebd91d1671af1ba98'),
-      (75, 1, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (76, 0, 'bmp', 20, 20, '4768d99988e30ef8c6804cdd6675b953cacc9570e95a1c0cbd5d745a365f2b9c'),
-      (76, 1, 'png', 28, 28, '344dd0aecd088c0a76d0a80ec594df4adc3a7c278e0f1ff1e26716bc8e796033'),
-      (77, 0, 'bmp', 21, 21, '58d7ac1cfb7b961004aa47242df68058564b30618a1fb586ec9244d74f778e76'),
-      (78, 0, 'bmp', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (78, 1, 'png', 30, 30, '27490c1e8c824119890e20b7e65e7dcfcaa8cf46a54926cde7b8b229854fae41'),
-      (79, 0, 'bmp', 23, 23, '5159fca5ec8b7473bf34632aaa6a78d42a5621279001ff77304eb21eb24e540f'),
-      (80, 0, 'bmp', 8, 8, '22743d7aba4912dcf9337079bf5a835a4e11baaf1c4067df0ec87036b55fc8bf'),
-      (80, 1, 'png', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (80, 2, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (81, 0, 'bmp', 9, 9, '623ab224375236067d633d3667ad6a172e81c1cbc508e2ad06c4c372a838adf3'),
-      (82, 0, 'bmp', 10, 10, '6a93ec685193a038f5dd65c7bca3c4ff67d45b863f7902c6ad904d48d3112121'),
-      (82, 1, 'png', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (83, 0, 'bmp', 11, 11, 'a9071749e44a5cba74a11ce0e9bc4c2e77cb561c3ffd74ca9106a0f4b3359214'),
-      (84, 0, 'bmp', 12, 12, 'ca8e8dba97ca8ee10638b9a817b7ebde84038e000fc349095f9359827c859206'),
-      (84, 1, 'png', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (85, 0, 'bmp', 13, 13, '00fb5104578b0b065d9342c6d78a488e46e57d955f11eccdb39f6d9546ba4902'),
-      (85, 1, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (86, 0, 'bmp', 14, 14, 'caedecf12ae93096c209d34eeeefac97bfda6a423851bb2ccb91e51de6236e92'),
-      (86, 1, 'png', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (87, 0, 'bmp', 15, 15, '221d73fd8c82f4fea909060027038251d9b4bf52ebca2ba62c2ebd93150a35f9'),
-      (88, 0, 'bmp', 16, 16, 'fa1223db30cfbdd39d2cbadc03e770f3eadf3a02a474de7b3e1e4eb66e1f52a3'),
-      (88, 1, 'png', 24, 24, '7c8b2d4f4b1782b1ea50304d23f86a1d6f9b73865a779cc4c4838c4ac3a59a6e'),
-      (89, 0, 'bmp', 17, 17, '08b138e55b2056d5f686052aea6030f2116a98a30080accbaef2eccc7f652106'),
-      (90, 0, 'bmp', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (90, 1, 'png', 26, 26, 'acd9a543b0733d1fa210d61fd88110d274e94e1efdb32772022f5a5f7c71ebd3'),
-      (90, 2, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (91, 0, 'bmp', 19, 19, 'e248343c4316f2e6dc1c26539ceb89ca9ba3ff8d3974d4bf99ad5786e54c61fc'),
-      (92, 0, 'bmp', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (92, 1, 'png', 28, 28, 'edcdfa048ea6d38d4e688a870c0deb1a5698d8207cecef2df6e2ffc3086b4de2'),
-      (93, 0, 'bmp', 21, 21, '3add5ac1074d1c3a07df2bc89a91ad23386b163af438ecb90bfe3a27e23a68b1'),
-      (94, 0, 'bmp', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (94, 1, 'png', 30, 30, '73a3b61306c276beef12776fb166ca13e33a4db553d4aa2fd94465bf2a4e6333'),
-      (95, 0, 'bmp', 23, 23, '47a40e3261737f692faa248d2db6d8762c835e64b11574b1459dd57288998aa7'),
-      (95, 1, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (96, 0, 'bmp', 8, 8, '1697584868a5ebc80dd9c992258bd033f233dbdfd5bdb6d0074c9a3de4895584'),
-      (96, 1, 'png', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (97, 0, 'bmp', 9, 9, 'ef4423cff00e53555c0be088db4c3bdc5390b1218428c6b833aa4d744f101fec'),
-      (98, 0, 'bmp', 10, 10, 'ba28d6de74d9a2b40d12e7e79975737f32712457fa5ac5d18a66cb9f71ea75cc'),
-      (98, 1, 'png', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (99, 0, 'bmp', 11, 11, '9a59234f82501f3579ec5728ba8ced4e2ae4ed8e8187c992546e562afd80330b'),
-      (100, 0, 'bmp', 12, 12, 'e5110943a93807d1deb2fbf0b8d6c10a4adec63b9be2c6e5d2427924ed7cae3b'),
-      (100, 1, 'png', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (100, 2, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (101, 0, 'bmp', 13, 13, '7dec995b8aad9bda9d341ddc1d7fafc4f66d19b782c0cec3cdc44e6a2bf4f98c'),
-      (102, 0, 'bmp', 14, 14, 'e18934118c2e74281ad49f651a66a9d48b4c1c36874b11fac60be5882f9217e6'),
-      (102, 1, 'png', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (103, 0, 'bmp', 15, 15, 'dbd6cf0c43e0582924a320002827225c06fe79f73ba704484a6cd700908b62c1'),
-      (104, 0, 'bmp', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (104, 1, 'png', 24, 24, '62300dd458f130aec9056bfa3b74cbded4b2fcb34c8026b2a19c2a4541afb967'),
-      (105, 0, 'bmp', 17, 17, 'debf84b9957bd7ea70a9e380517e217e0fd0470c14ad8b52eb19c8d2b1d622e2'),
-      (105, 1, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (106, 0, 'bmp', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (106, 1, 'png', 26, 26, '6a117d7c0921ddf045de677c567f96c8c357407d939d5a8cb7501b6fc0980705'),
-      (107, 0, 'bmp', 19, 19, '1b8b067a98a9109fcc967df364f929b5f6a5001ccd9769a4cadbd18e3a9c461d'),
-      (108, 0, 'bmp', 20, 20, 'c03470985af840d9fc82905c60065a802766226903c738adb68631630ab3fb99'),
-      (108, 1, 'png', 28, 28, '4e71c116e20fd2f3032973fdf04b3640eb3d466f89b76a19d58f403614aca0e2'),
-      (109, 0, 'bmp', 21, 21, '62ee8c56a31dbd897793dd3d1556ab6119afa596df1b993d7112df1add06cd1b'),
-      (110, 0, 'bmp', 22, 22, 'f4eb1c2a2630260cd4dd9f03672ebf137419e65738ab96027a6a14e0ca9257d1'),
-      (110, 1, 'png', 30, 30, '3dc3dc421fb86254b1795cf2c45375037353cfe8118891011bdef31cd579da2c'),
-      (110, 2, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (111, 0, 'bmp', 23, 23, 'f0c35053017cfd416af840e020f550283bb5df3ea8788ad0d29cd46ee511029a'),
-      (112, 0, 'bmp', 8, 8, 'b6d969c4aed4371f4d343bea874ca81e1a5491a280fcfbaa999d8bb4abef51b8'),
-      (112, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (113, 0, 'bmp', 9, 9, 'b084b58c8d215868c587e6cb2526ab13a938198251088a7a31602f7c19a6e65d'),
-      (114, 0, 'bmp', 10, 10, 'cc044dbb47968714e2af67794b40484e2a0a09efa340b69d7aea733d4999ef17'),
-      (114, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (115, 0, 'bmp', 11, 11, 'ed54d2d82a7a9c4593c894f8ba611f3f69a8fb60e49721bcc1541b1e82341f73'),
-      (115, 1, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (116, 0, 'bmp', 12, 12, '6c930520969bf42a475bee30d7e6e2426d7ab3d8204ab1c7fdf583b0f5ccc49e'),
-      (116, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (117, 0, 'bmp', 13, 13, '177065014847be83b9d949694cc3bf2eec6baedc7f1776c4f2ff227e4eb9df73'),
-      (118, 0, 'bmp', 14, 14, '490aedd3f7e5039e43a7c0e8d79212dc00ce27ccd66d0a7801b96cd69bcac260'),
-      (118, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (119, 0, 'bmp', 15, 15, 'a9e9661f9e2f0ee77b3911f2e7bba08708a5da10f56fe48ad224863c619ca914'),
-      (120, 0, 'bmp', 16, 16, '152cec2f9a8b9eba63634b0365bd006be1b0c0d1aa3a685f05adacee63f79b8b'),
-      (120, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (120, 2, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (121, 0, 'bmp', 17, 17, '66bb486da93d15bec029309a47aeed3b012c486f3c1b1e6e7378177b368d98f2'),
-      (122, 0, 'bmp', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (122, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (123, 0, 'bmp', 19, 19, 'f59d6e514e32a74313f2d42c58d2e05f4dba7c24669a4cddbaaf27e30d92fe4a'),
-      (124, 0, 'bmp', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (124, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (125, 0, 'bmp', 21, 21, 'bff0069543398b616610ee94c0aac20033cafea6cbd0f1442437dc2bee06272a'),
-      (125, 1, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (126, 0, 'bmp', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (126, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (127, 0, 'bmp', 23, 23, 'd318d18af78a730e8caea728e6d7d49d3acaed501885f059b8dfbe7a1ca0d0f4'),
-      (128, 0, 'bmp', 8, 8, '0d37d34a76dce11f2abb585ffdc1ca8678e11108954a4ea65a6a58273b2a3b7b'),
-      (128, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (129, 0, 'bmp', 9, 9, 'e71402f03b19e6b3fd74efa1dd42ec79755017445abd19b6274c0645e208d55f'),
-      (130, 0, 'bmp', 10, 10, 'dc6d29506c18452f5553085d2180ef3a09af97236a5806e85d5109b52bf1a99e'),
-      (130, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (130, 2, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (131, 0, 'bmp', 11, 11, 'fda48a00ddfcc19bc136aaca5e047ccf8fed82c95886fc4538c15991ac366676'),
-      (132, 0, 'bmp', 12, 12, '972693347cd0f05e3042ceb9340704863c292651f355dc5071f31ca84b01d4a4'),
-      (132, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (133, 0, 'bmp', 13, 13, '98e3655dbff81e40787f33402107d51f6595a664034caad27d3b1d2770746b5f'),
-      (134, 0, 'bmp', 14, 14, 'b127aae44ddda382bd2597f1c7ccfdbcf5b1a234b8f9f3d7a929c907c1374ea2'),
-      (134, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (135, 0, 'bmp', 15, 15, 'fa707f76b4540ef4f9209ec52971e1680935745496874c68b9a516f852e04517'),
-      (135, 1, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (136, 0, 'bmp', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (136, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (137, 0, 'bmp', 17, 17, '952fce4c5028c749d51d29121f55ac2803c2cdde6d012a514eb49dce6e1ea90a'),
-      (138, 0, 'bmp', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (138, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (139, 0, 'bmp', 19, 19, '7eec444c83989db49958cd693b71337683259a34e9f51d6b10d3bfdfe2f6b8e9'),
-      (140, 0, 'bmp', 20, 20, '8dcd5e3fe9259afcd4f1defe8d7d3e345da6c6035cb9350ed6d7716d203321cf'),
-      (140, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (140, 2, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (141, 0, 'bmp', 21, 21, 'a376d66a0d97824c411de54ef657b48a06c50b7b9e19e9fec7e96f0b586783f1'),
-      (142, 0, 'bmp', 22, 22, 'e9d6040ac9d2258a01f5d6e691c2b4addea78e67164fa61e6a724a0d35aa47c3'),
-      (142, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (143, 0, 'bmp', 23, 23, '79770f050285fbec1b8f067150baf852633e80b54dfb0bdc18aeb4afb2c7db80'),
-      (144, 0, 'bmp', 8, 8, '9c35871ec98e27d110ff1c7abb7e490be9455625aba8878316e477629f581438'),
-      (144, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (145, 0, 'bmp', 9, 9, '275bb996498b534a90bde28564667c70d0881fcfab78739d9c941dc48da34e4c'),
-      (145, 1, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (146, 0, 'bmp', 10, 10, '06b9e48c807013f44bea00adba7a1d815a84aaf129eb52d115da64a97c692b0b'),
-      (146, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (147, 0, 'bmp', 11, 11, 'c15ce141397fa95e2966182bf8c25dfba87a7202ce7d4615446d1bc83c600acb'),
-      (148, 0, 'bmp', 12, 12, 'a350a7eb2abfed4d8298ad20b640b79d28d818c13b95e05638bdbe930abc062d'),
-      (148, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (149, 0, 'bmp', 13, 13, '827d59dd1fe9b4b9d63d9e19bbfd8ab9ae49d315b9d9dcb7fa0b88de987c8f4b'),
-      (150, 0, 'bmp', 14, 14, 'ef4e9f35080c8026af0cb7c2bc943147c34a6b83a931e1691470cb12c9dc12f0'),
-      (150, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (150, 2, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (151, 0, 'bmp', 15, 15, 'dad3d64829a91d3927896c85caae62481211c04909f9966c2b75d11a6eca0ce8'),
-      (152, 0, 'bmp', 16, 16, '249f73282696c34852883f182488bd0b14a8c4f5f8f63c5a183c7b01b8da7eb9'),
-      (152, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (153, 0, 'bmp', 17, 17, '34d310537bd5b5d5733d2c2b340a20ca46981a55b1454f2a8868b64ee851dc2d'),
-      (154, 0, 'bmp', 18, 18, '7e756e671cea36f202cce81fbe1e3946f8462b6db752550bb0181163b4b3ffc2'),
-      (154, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (155, 0, 'bmp', 19, 19, 'b820b4c604f8f8df07ce233ed6de67ccd7b7a43133ea69e63531be4dc72fda74'),
-      (155, 1, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (156, 0, 'bmp', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (156, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (157, 0, 'bmp', 21, 21, 'e9f64da99fae8f669369c1c3b9961f68cf910e3a8071c51cea88d678046a49bc'),
-      (158, 0, 'bmp', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (158, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (159, 0, 'bmp', 23, 23, 'f96136caa6ec85c4195276192e13d749e90a380990ee25ac7c9005fef08aa39d'),
-      (160, 0, 'bmp', 8, 8, '3f422fc324271194410107be4b4e2834d3538b9188499181046f80925e4079ba'),
-      (160, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (160, 2, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (161, 0, 'bmp', 9, 9, '6ea0caa302375e011846b7109d6f7a9892cfedb8d506dffa4e6263ead45459d1'),
-      (162, 0, 'bmp', 10, 10, '6c60c0dbd00cbd9169425d44fa0f02f1c587be6bf8edc555e9651bb426a56a46'),
-      (162, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (163, 0, 'bmp', 11, 11, 'cde73da2e96ebe2a311a79d3d32abee76075d5d08ca8cf13cfe9b6ad9ce63d96'),
-      (164, 0, 'bmp', 12, 12, 'be7504b36de4acb076e17d46148178b2a39947f91a65893e02536e10e0ed4e63'),
-      (164, 1, 'png', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (165, 0, 'bmp', 13, 13, 'fa33e1749bc99a894ea89223aa3a19890ffcd7cdb7ebb3448f0e671b4c5a7fba'),
-      (165, 1, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (166, 0, 'bmp', 14, 14, 'dae0e6e3c35932c12ad693b879cfaeb0b45fcac23d828dad7bda012b564fe134'),
-      (166, 1, 'png', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (167, 0, 'bmp', 15, 15, '191afedf2ba23200d46c045449a9a613dd11b042781c57c31211cfd9b9f48051'),
-      (168, 0, 'bmp', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (168, 1, 'png', 24, 24, '96690ea8d20eb7c78dc6d72976292cdddf1da39fab76a6a3162b3f3689ad1630'),
-      (169, 0, 'bmp', 17, 17, 'c91428c0b1ef1cf14fbdea946fe0f071ccaa898b987f7eccc02080d3a31044a4'),
-      (170, 0, 'bmp', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (170, 1, 'png', 26, 26, 'a782e1782e460375d340506b6dbcf6c448325c067f7a394dec57a9d820b896e4'),
-      (170, 2, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (171, 0, 'bmp', 19, 19, '7cf73e594308d96c652b708690133f5ba87c7f09abec64f90fccbd32f6938121'),
-      (172, 0, 'bmp', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (172, 1, 'png', 28, 28, '4f7a7eafef7bfe74ebdc2dccdf76001b90ca1a73212bd5dea7bb9808120e9f89'),
-      (173, 0, 'bmp', 21, 21, '2546160fc545cdb08dbb1725a779b24d1b147b9a994a8c0725847bb55b23801f'),
-      (174, 0, 'bmp', 22, 22, '6aeb8387c63660c985f5593a9240ff711bda7a6d710ef12314779d7fa8c7a487'),
-      (174, 1, 'png', 30, 30, '619327d629e385c846479a8e63623efd604d9eae49cae31bac9f09843963950b'),
-      (175, 0, 'bmp', 23, 23, '82f7f88a3affdccf2ec705d6e7dff46a0bb0b158d38a23f1cc926ee3ecebc735'),
-      (175, 1, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (176, 0, 'bmp', 8, 8, '069cfda8c7639a3d7f24acf85d858ef2516968ca516046f9987ff35176a132f1'),
-      (176, 1, 'png', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (177, 0, 'bmp', 9, 9, '8e6d7fccbd98ceabb43b307270f9d1b2cd659cee87000ebec027fa4ab3af712b'),
-      (178, 0, 'bmp', 10, 10, '6489a7a2e16574509b40972488e779ac8eeba8a0cd57d99acf20e493096fd092'),
-      (178, 1, 'png', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (179, 0, 'bmp', 11, 11, 'bea3e28d65eea8d364f5413b9433c9918d5ae0c378fd4b70f9c1e43f0aa87729'),
-      (180, 0, 'bmp', 12, 12, 'a8ab3db38471b305fcc6b9986d1488b826725254602e8f3868c5c5bfa00ca02e'),
-      (180, 1, 'png', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (180, 2, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (181, 0, 'bmp', 13, 13, '4d49a0439d6f798057cdbfdc23c5f35afbf2068ba5d57f65260152259ea0944e'),
-      (182, 0, 'bmp', 14, 14, '7f6c34fea6529525ed7fe206c4b34db2b76a7b8ee9d257d51c8698181fe0d5c1'),
-      (182, 1, 'png', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (183, 0, 'bmp', 15, 15, 'c4199eb92f0dc482de9af932d76b677d8ffce53e0deb5d35c89e958e2526e88e'),
-      (184, 0, 'bmp', 16, 16, 'da86c9930ff5ae34564525d8fcbed06f98b47aaf8aa67b476836d016129b61bc'),
-      (184, 1, 'png', 24, 24, '5c097639903c707fdd73d8163c9c8a69a414e42db9023fc23d713db39b7ae6fb'),
-      (185, 0, 'bmp', 17, 17, '87242fc3d4a7999aaa7bd75652aa413bdb05cddf544d92a3daec8b7ff2c85324'),
-      (185, 1, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (186, 0, 'bmp', 18, 18, '60cc9337cd2dba452774790e1280fb58aa7a675d3fbee7fab5ae8266a1a02509'),
-      (186, 1, 'png', 26, 26, '3a7a6b4e1ae3ef0602e41596a08f548c02b339b4ec35dcf025ddf32396a34941'),
-      (187, 0, 'bmp', 19, 19, '4b71cb93a342a056af70f95b504e4cacecfb9708639df2e11b6153723da88e44'),
-      (188, 0, 'bmp', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (188, 1, 'png', 28, 28, '344dd0aecd088c0a76d0a80ec594df4adc3a7c278e0f1ff1e26716bc8e796033'),
-      (189, 0, 'bmp', 21, 21, 'e7169c46cafe27bb0ab2835735cf8b730c6d435d43db34247ac56e9debdf0305'),
-      (190, 0, 'bmp', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (190, 1, 'png', 30, 30, '27490c1e8c824119890e20b7e65e7dcfcaa8cf46a54926cde7b8b229854fae41'),
-      (190, 2, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (191, 0, 'bmp', 23, 23, 'c23258bb4801fc64e56703792410cb07369929b9c2cfc9448aeffb9245da8544'),
-      (192, 0, 'bmp', 8, 8, '71288e069b17f6521247d5715896308f6b9137bdfe52e42eac16b925ef639b59'),
-      (192, 1, 'png', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (193, 0, 'bmp', 9, 9, '338e6e5e89c0404a8780ea5a804d60b2835f7f2df5c56dbc52fea2cc967a5c1c'),
-      (194, 0, 'bmp', 10, 10, '03302d0c754f12a61ce3b22bbd57310f723bc867fb2bdb26c70282be7de4e516'),
-      (194, 1, 'png', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (195, 0, 'bmp', 11, 11, 'd77cca2f9469cecdecb982d8cd605e37a2ed6ba7bedbb6ac059723abca4cd388'),
-      (195, 1, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (196, 0, 'bmp', 12, 12, '8f56855cffd4af7857ab539f5f422fade63cc34336785ec03888914aef6c08cb'),
-      (196, 1, 'png', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (197, 0, 'bmp', 13, 13, '564c935d0c14584cc12b33c1c7c435c868d72ce88eb5aa2cef8cde5c44f22539'),
-      (198, 0, 'bmp', 14, 14, '12f1a45b98817a9a8c98d041aad75385c891a54653f771ab67185574ef1afe1a'),
-      (198, 1, 'png', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (199, 0, 'bmp', 15, 15, '41112aaf8aee044458aba60ec5fbc0a28ca4a6ae098facb72473a8cee1489c0a'),
-      (200, 0, 'bmp', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (200, 1, 'png', 24, 24, '7c8b2d4f4b1782b1ea50304d23f86a1d6f9b73865a779cc4c4838c4ac3a59a6e'),
-      (200, 2, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (201, 0, 'bmp', 17, 17, 'a46199de211a6eb8230adc46f636a8e511a780088c6265b9f4e6596bbf647c8c'),
-      (202, 0, 'bmp', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (202, 1, 'png', 26, 26, 'acd9a543b0733d1fa210d61fd88110d274e94e1efdb32772022f5a5f7c71ebd3'),
-      (203, 0, 'bmp', 19, 19, 'cc71e0bb7e511f83b20712dfe3960e88e9962034143b4d90c3cc269c62089a50'),
-      (204, 0, 'bmp', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (204, 1, 'png', 28, 28, 'edcdfa048ea6d38d4e688a870c0deb1a5698d8207cecef2df6e2ffc3086b4de2'),
-      (205, 0, 'bmp', 21, 21, '7700710c3c0db7052cb89079b06dcd09c3fcc26abcf36f4c6a7e6b7564556233'),
-      (205, 1, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (206, 0, 'bmp', 22, 22, 'cbf49f700382d1a54ea8ce46d4c7cd52eb93deaffc68debb358a4a20d5976c56'),
-      (206, 1, 'png', 30, 30, '73a3b61306c276beef12776fb166ca13e33a4db553d4aa2fd94465bf2a4e6333'),
-      (207, 0, 'bmp', 23, 23, '10d3072922bbc944cf6cf8fa977b0b25c12cd840a5d7d63ad993a8ee6e346a99'),
-      (208, 0, 'bmp', 8, 8, '874e5a624d06682411032b26ed4588e3c0bd6ea8e9d29f5ae77e40edc7bd2a94'),
-      (208, 1, 'png', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (209, 0, 'bmp', 9, 9, '175a465b7ad63c4d965c0b8caff4c2d0b23feffdab6ace17da11b3dbd3b09d74'),
-      (210, 0, 'bmp', 10, 10, '8cb5a2f6b111de783ce73a41a660da582b7009c3c979b63dce51a54c6c3643f5'),
-      (210, 1, 'png', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (210, 2, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (211, 0, 'bmp', 11, 11, 'beddef1710d971aac7f01947027b8f8fa2764b9a1f9c31fdea3376debcf86d52'),
-      (212, 0, 'bmp', 12, 12, '7e5c343efad934797fdbd9df913187a7e49848fd10910f98858ceedc710d428e'),
-      (212, 1, 'png', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (213, 0, 'bmp', 13, 13, '58e18b3df777d5f92c725c1341d3c0b716ee097dbae7c59f3b9561c509b0a917'),
-      (214, 0, 'bmp', 14, 14, 'ff2a0fdfe294715ca8f983e1509924accbd43ae8f4d8392c8c21e0c54d089a92'),
-      (214, 1, 'png', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (215, 0, 'bmp', 15, 15, 'c9289d8450634ebde230ee8bbd5a2f1ec29cfe2ffba340c4a14ad348e666f265'),
-      (215, 1, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (216, 0, 'bmp', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (216, 1, 'png', 24, 24, '62300dd458f130aec9056bfa3b74cbded4b2fcb34c8026b2a19c2a4541afb967'),
-      (217, 0, 'bmp', 17, 17, '0671e16461dd257f5817b006378136aa636484dc854cf5d737711c7e977d62c4'),
-      (218, 0, 'bmp', 18, 18, '9f620d0cf803bf731ec5058a87f4065dc8c6a71d1b7232b60020c597e11fc78c'),
-      (218, 1, 'png', 26, 26, '6a117d7c0921ddf045de677c567f96c8c357407d939d5a8cb7501b6fc0980705'),
-      (219, 0, 'bmp', 19, 19, '55fa44a354fca655fb6f1093db3a8b4856c1ce92732f4d8b8fa15278f0d475e3'),
-      (220, 0, 'bmp', 20, 20, 'de1c6f6451f9b875374f3eb1e747a20aae4af20426852813a8f7ebea5bb5a9d1'),
-      (220, 1, 'png', 28, 28, '4e71c116e20fd2f3032973fdf04b3640eb3d466f89b76a19d58f403614aca0e2'),
-      (220, 2, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (221, 0, 'bmp', 21, 21, '07aae9a145818add59574453008e2be1e6119f6dcfcbc0cdfc0d81414a043193'),
-      (222, 0, 'bmp', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (222, 1, 'png', 30, 30, '3dc3dc421fb86254b1795cf2c45375037353cfe8118891011bdef31cd579da2c'),
-      (223, 0, 'bmp', 23, 23, 'dee3e16d6f8261055bad76d4f2e3488c133090d8e1ea68f8ecf3856c4af915e5'),
-      (224, 0, 'bmp', 8, 8, '5e8e08b9ee6da5f0ae870469f7c9b54976850da43711456681c5f8a54110b3f2'),
-      (224, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (225, 0, 'bmp', 9, 9, 'bf1b63cd2f8b2349fd7417b6732c6850f4e02eda6577daa97bcec9afaf09bf42'),
-      (225, 1, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (226, 0, 'bmp', 10, 10, '7e65e8db3993736f4144186578fb69a4cc7397bfead33680cbbd72afdd970a93'),
-      (226, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (227, 0, 'bmp', 11, 11, '3f9ca6d58b3d82adf23cdf83453f921f62f0968637ce5df833939992e5c9a691'),
-      (228, 0, 'bmp', 12, 12, 'a493407e2379dda0832cc7158d55440698f6afad65cb9b66792a6b840e956df0'),
-      (228, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (229, 0, 'bmp', 13, 13, '98e60d313f0cc42ba55b0da01135e63309f05b56d507f6462081297e8c271170'),
-      (230, 0, 'bmp', 14, 14, 'a79b0274ff49f58eb31d9ba7cee35716efcb3394299377bbc571569e9f852cf1'),
-      (230, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (230, 2, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (231, 0, 'bmp', 15, 15, '9a00028e32e3a35b344a8d1ebda74150ee068505dd7580acfd557dd516907a3f'),
-      (232, 0, 'bmp', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (232, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (233, 0, 'bmp', 17, 17, '05536b658f11e698ea5d5e7239989f35e9a13d0e9b4a7cb635c01e92bd314a8b'),
-      (234, 0, 'bmp', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (234, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (235, 0, 'bmp', 19, 19, 'e5d9aba837f713d30d3eb0cdce9f0a216809775c36167384fe8e13ff11682d3c'),
-      (235, 1, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (236, 0, 'bmp', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (236, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (237, 0, 'bmp', 21, 21, 'd723ab7ee5596f67637fa0f9ef1e8f91d6fc7bee3d9c6d8d9fabee6b4213caab'),
-      (238, 0, 'bmp', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (238, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (239, 0, 'bmp', 23, 23, '86a71a721902290b1a1fc7da78a10932d0b26b6b2044dc8f5cff7d4a5ecf9549'),
-      (240, 0, 'bmp', 8, 8, '08110461458c37a2acb3fc9c00fca69b30113b83728fc727fe0db4dc611b00cd'),
-      (240, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (240, 2, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (241, 0, 'bmp', 9, 9, 'e30011ec5136c62cc39b318fc999cc3f8f80752ac06748dc4eeeaa0335c5f112'),
-      (242, 0, 'bmp', 10, 10, '34b80c4ab949486bf89c6cd6383d0875cc95a61b112dc7cd123887fe33e4e345'),
-      (242, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (243, 0, 'bmp', 11, 11, '135ae0746bc20a6a98930f2d8e5fcdb442a782b6d239114ad3a9c648ccf8b693'),
-      (244, 0, 'bmp', 12, 12, 'a0a88ea5ed5676df041352567dfe78c07d01ee3ab3cb31254fee690e70b7868c'),
-      (244, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (245, 0, 'bmp', 13, 13, 'f8d6f42e81320e6525c2ce4059fafdb75babfd1646f4f02f0f2c8a708f427dcb'),
-      (245, 1, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (246, 0, 'bmp', 14, 14, '372cfe82b6a66f83561e56848e99347f6ce057146711abb8d9219ca17614c035'),
-      (246, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (247, 0, 'bmp', 15, 15, 'fbec80be77b295acbd255ba58981b8cd501c9e8eb5f9eba3dce8729df7a16c3d'),
-      (248, 0, 'bmp', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (248, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (249, 0, 'bmp', 17, 17, '79cea73fffdd12b627928361e1f72b24c059e24cfd6190e16da6b497f3cd3f80'),
-      (250, 0, 'bmp', 18, 18, 'f20c70ef0023645fa61bfed860b008fbac3b91c50ea9e59f95c99c0c1c57814a'),
-      (250, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (250, 2, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (251, 0, 'bmp', 19, 19, '9855633caafbdf4b55379174d5f13b671be5a24de4d172cebd91d1671af1ba98'),
-      (252, 0, 'bmp', 20, 20, '4768d99988e30ef8c6804cdd6675b953cacc9570e95a1c0cbd5d745a365f2b9c'),
-      (252, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (253, 0, 'bmp', 21, 21, '58d7ac1cfb7b961004aa47242df68058564b30618a1fb586ec9244d74f778e76'),
-      (254, 0, 'bmp', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (254, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (255, 0, 'bmp', 23, 23, '5159fca5ec8b7473bf34632aaa6a78d42a5621279001ff77304eb21eb24e540f'),
-      (255, 1, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (256, 0, 'bmp', 8, 8, '22743d7aba4912dcf9337079bf5a835a4e11baaf1c4067df0ec87036b55fc8bf'),
-      (256, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (257, 0, 'bmp', 9, 9, '623ab224375236067d633d3667ad6a172e81c1cbc508e2ad06c4c372a838adf3'),
-      (258, 0, 'bmp', 10, 10, '6a93ec685193a038f5dd65c7bca3c4ff67d45b863f7902c6ad904d48d3112121'),
-      (258, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (259, 0, 'bmp', 11, 11, 'a9071749e44a5cba74a11ce0e9bc4c2e77cb561c3ffd74ca9106a0f4b3359214'),
-      (260, 0, 'bmp', 12, 12, 'ca8e8dba97ca8ee10638b9a817b7ebde84038e000fc349095f9359827c859206'),
-      (260, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (260, 2, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (261, 0, 'bmp', 13, 13, '00fb5104578b0b065d9342c6d78a488e46e57d955f11eccdb39f6d9546ba4902'),
-      (262, 0, 'bmp', 14, 14, 'caedecf12ae93096c209d34eeeefac97bfda6a423851bb2ccb91e51de6236e92'),
-      (262, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (263, 0, 'bmp', 15, 15, '221d73fd8c82f4fea909060027038251d9b4bf52ebca2ba62c2ebd93150a35f9'),
-      (264, 0, 'bmp', 16, 16, 'fa1223db30cfbdd39d2cbadc03e770f3eadf3a02a474de7b3e1e4eb66e1f52a3'),
-      (264, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (265, 0, 'bmp', 17, 17, '08b138e55b2056d5f686052aea6030f2116a98a30080accbaef2eccc7f652106'),
-      (265, 1, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (266, 0, 'bmp', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (266, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (267, 0, 'bmp', 19, 19, 'e248343c4316f2e6dc1c26539ceb89ca9ba3ff8d3974d4bf99ad5786e54c61fc'),
-      (268, 0, 'bmp', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (268, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (269, 0, 'bmp', 21, 21, '3add5ac1074d1c3a07df2bc89a91ad23386b163af438ecb90bfe3a27e23a68b1'),
-      (270, 0, 'bmp', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (270, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (270, 2, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (271, 0, 'bmp', 23, 23, '47a40e3261737f692faa248d2db6d8762c835e64b11574b1459dd57288998aa7'),
-      (272, 0, 'bmp', 8, 8, '1697584868a5ebc80dd9c992258bd033f233dbdfd5bdb6d0074c9a3de4895584'),
-      (272, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (273, 0, 'bmp', 9, 9, 'ef4423cff00e53555c0be088db4c3bdc5390b1218428c6b833aa4d744f101fec'),
-      (274, 0, 'bmp', 10, 10, 'ba28d6de74d9a2b40d12e7e79975737f32712457fa5ac5d18a66cb9f71ea75cc'),
-      (274, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (275, 0, 'bmp', 11, 11, '9a59234f82501f3579ec5728ba8ced4e2ae4ed8e8187c992546e562afd80330b'),
-      (275, 1, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (276, 0, 'bmp', 12, 12, 'e5110943a93807d1deb2fbf0b8d6c10a4adec63b9be2c6e5d2427924ed7cae3b'),
-      (276, 1, 'png', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (277, 0, 'bmp', 13, 13, '7dec995b8aad9bda9d341ddc1d7fafc4f66d19b782c0cec3cdc44e6a2bf4f98c'),
-      (278, 0, 'bmp', 14, 14, 'e18934118c2e74281ad49f651a66a9d48b4c1c36874b11fac60be5882f9217e6'),
-      (278, 1, 'png', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (279, 0, 'bmp', 15, 15, 'dbd6cf0c43e0582924a320002827225c06fe79f73ba704484a6cd700908b62c1'),
-      (280, 0, 'bmp', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (280, 1, 'png', 24, 24, '96690ea8d20eb7c78dc6d72976292cdddf1da39fab76a6a3162b3f3689ad1630'),
-      (280, 2, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (281, 0, 'bmp', 17, 17, 'debf84b9957bd7ea70a9e380517e217e0fd0470c14ad8b52eb19c8d2b1d622e2'),
-      (282, 0, 'bmp', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (282, 1, 'png', 26, 26, 'a782e1782e460375d340506b6dbcf6c448325c067f7a394dec57a9d820b896e4'),
-      (283, 0, 'bmp', 19, 19, '1b8b067a98a9109fcc967df364f929b5f6a5001ccd9769a4cadbd18e3a9c461d'),
-      (284, 0, 'bmp', 20, 20, 'c03470985af840d9fc82905c60065a802766226903c738adb68631630ab3fb99'),
-      (284, 1, 'png', 28, 28, '4f7a7eafef7bfe74ebdc2dccdf76001b90ca1a73212bd5dea7bb9808120e9f89'),
-      (285, 0, 'bmp', 21, 21, '62ee8c56a31dbd897793dd3d1556ab6119afa596df1b993d7112df1add06cd1b'),
-      (285, 1, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (286, 0, 'bmp', 22, 22, 'f4eb1c2a2630260cd4dd9f03672ebf137419e65738ab96027a6a14e0ca9257d1'),
-      (286, 1, 'png', 30, 30, '619327d629e385c846479a8e63623efd604d9eae49cae31bac9f09843963950b'),
-      (287, 0, 'bmp', 23, 23, 'f0c35053017cfd416af840e020f550283bb5df3ea8788ad0d29cd46ee511029a'),
-      (288, 0, 'bmp', 8, 8, 'b6d969c4aed4371f4d343bea874ca81e1a5491a280fcfbaa999d8bb4abef51b8'),
-      (288, 1, 'png', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (289, 0, 'bmp', 9, 9, 'b084b58c8d215868c587e6cb2526ab13a938198251088a7a31602f7c19a6e65d'),
-      (290, 0, 'bmp', 10, 10, 'cc044dbb47968714e2af67794b40484e2a0a09efa340b69d7aea733d4999ef17'),
-      (290, 1, 'png', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (290, 2, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (291, 0, 'bmp', 11, 11, 'ed54d2d82a7a9c4593c894f8ba611f3f69a8fb60e49721bcc1541b1e82341f73'),
-      (292, 0, 'bmp', 12, 12, '6c930520969bf42a475bee30d7e6e2426d7ab3d8204ab1c7fdf583b0f5ccc49e'),
-      (292, 1, 'png', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (293, 0, 'bmp', 13, 13, '177065014847be83b9d949694cc3bf2eec6baedc7f1776c4f2ff227e4eb9df73'),
-      (294, 0, 'bmp', 14, 14, '490aedd3f7e5039e43a7c0e8d79212dc00ce27ccd66d0a7801b96cd69bcac260'),
-      (294, 1, 'png', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (295, 0, 'bmp', 15, 15, 'a9e9661f9e2f0ee77b3911f2e7bba08708a5da10f56fe48ad224863c619ca914'),
-      (295, 1, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (296, 0, 'bmp', 16, 16, '152cec2f9a8b9eba63634b0365bd006be1b0c0d1aa3a685f05adacee63f79b8b'),
-      (296, 1, 'png', 24, 24, '5c097639903c707fdd73d8163c9c8a69a414e42db9023fc23d713db39b7ae6fb'),
-      (297, 0, 'bmp', 17, 17, '66bb486da93d15bec029309a47aeed3b012c486f3c1b1e6e7378177b368d98f2'),
-      (298, 0, 'bmp', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (298, 1, 'png', 26, 26, '3a7a6b4e1ae3ef0602e41596a08f548c02b339b4ec35dcf025ddf32396a34941'),
-      (299, 0, 'bmp', 19, 19, 'f59d6e514e32a74313f2d42c58d2e05f4dba7c24669a4cddbaaf27e30d92fe4a'),
-      (300, 0, 'bmp', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (300, 1, 'png', 28, 28, '344dd0aecd088c0a76d0a80ec594df4adc3a7c278e0f1ff1e26716bc8e796033'),
-      (300, 2, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (301, 0, 'bmp', 21, 21, 'bff0069543398b616610ee94c0aac20033cafea6cbd0f1442437dc2bee06272a'),
-      (302, 0, 'bmp', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (302, 1, 'png', 30, 30, '27490c1e8c824119890e20b7e65e7dcfcaa8cf46a54926cde7b8b229854fae41'),
-      (303, 0, 'bmp', 23, 23, 'd318d18af78a730e8caea728e6d7d49d3acaed501885f059b8dfbe7a1ca0d0f4'),
-      (304, 0, 'bmp', 8, 8, '0d37d34a76dce11f2abb585ffdc1ca8678e11108954a4ea65a6a58273b2a3b7b'),
-      (304, 1, 'png', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (305, 0, 'bmp', 9, 9, 'e71402f03b19e6b3fd74efa1dd42ec79755017445abd19b6274c0645e208d55f'),
-      (305, 1, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (306, 0, 'bmp', 10, 10, 'dc6d29506c18452f5553085d2180ef3a09af97236a5806e85d5109b52bf1a99e'),
-      (306, 1, 'png', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (307, 0, 'bmp', 11, 11, 'fda48a00ddfcc19bc136aaca5e047ccf8fed82c95886fc4538c15991ac366676'),
-      (308, 0, 'bmp', 12, 12, '972693347cd0f05e3042ceb9340704863c292651f355dc5071f31ca84b01d4a4'),
-      (308, 1, 'png', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (309, 0, 'bmp', 13, 13, '98e3655dbff81e40787f33402107d51f6595a664034caad27d3b1d2770746b5f'),
-      (310, 0, 'bmp', 14, 14, 'b127aae44ddda382bd2597f1c7ccfdbcf5b1a234b8f9f3d7a929c907c1374ea2'),
-      (310, 1, 'png', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (310, 2, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (311, 0, 'bmp', 15, 15, 'fa707f76b4540ef4f9209ec52971e1680935745496874c68b9a516f852e04517'),
-      (312, 0, 'bmp', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (312, 1, 'png', 24, 24, '7c8b2d4f4b1782b1ea50304d23f86a1d6f9b73865a779cc4c4838c4ac3a59a6e'),
-      (313, 0, 'bmp', 17, 17, '952fce4c5028c749d51d29121f55ac2803c2cdde6d012a514eb49dce6e1ea90a'),
-      (314, 0, 'bmp', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (314, 1, 'png', 26, 26, 'acd9a543b0733d1fa210d61fd88110d274e94e1efdb32772022f5a5f7c71ebd3'),
-      (315, 0, 'bmp', 19, 19, '7eec444c83989db49958cd693b71337683259a34e9f51d6b10d3bfdfe2f6b8e9'),
-      (315, 1, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (316, 0, 'bmp', 20, 20, '8dcd5e3fe9259afcd4f1defe8d7d3e345da6c6035cb9350ed6d7716d203321cf'),
-      (316, 1, 'png', 28, 28, 'edcdfa048ea6d38d4e688a870c0deb1a5698d8207cecef2df6e2ffc3086b4de2'),
-      (317, 0, 'bmp', 21, 21, 'a376d66a0d97824c411de54ef657b48a06c50b7b9e19e9fec7e96f0b586783f1'),
-      (318, 0, 'bmp', 22, 22, 'e9d6040ac9d2258a01f5d6e691c2b4addea78e67164fa61e6a724a0d35aa47c3'),
-      (318, 1, 'png', 30, 30, '73a3b61306c276beef12776fb166ca13e33a4db553d4aa2fd94465bf2a4e6333'),
-      (319, 0, 'bmp', 23, 23, '79770f050285fbec1b8f067150baf852633e80b54dfb0bdc18aeb4afb2c7db80'),
-      (320, 0, 'bmp', 8, 8, '9c35871ec98e27d110ff1c7abb7e490be9455625aba8878316e477629f581438'),
-      (320, 1, 'png', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (320, 2, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (321, 0, 'bmp', 9, 9, '275bb996498b534a90bde28564667c70d0881fcfab78739d9c941dc48da34e4c'),
-      (322, 0, 'bmp', 10, 10, '06b9e48c807013f44bea00adba7a1d815a84aaf129eb52d115da64a97c692b0b'),
-      (322, 1, 'png', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (323, 0, 'bmp', 11, 11, 'c15ce141397fa95e2966182bf8c25dfba87a7202ce7d4615446d1bc83c600acb'),
-      (324, 0, 'bmp', 12, 12, 'a350a7eb2abfed4d8298ad20b640b79d28d818c13b95e05638bdbe930abc062d'),
-      (324, 1, 'png', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (325, 0, 'bmp', 13, 13, '827d59dd1fe9b4b9d63d9e19bbfd8ab9ae49d315b9d9dcb7fa0b88de987c8f4b'),
-      (325, 1, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (326, 0, 'bmp', 14, 14, 'ef4e9f35080c8026af0cb7c2bc943147c34a6b83a931e1691470cb12c9dc12f0'),
-      (326, 1, 'png', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (327, 0, 'bmp', 15, 15, 'dad3d64829a91d3927896c85caae62481211c04909f9966c2b75d11a6eca0ce8'),
-      (328, 0, 'bmp', 16, 16, '249f73282696c34852883f182488bd0b14a8c4f5f8f63c5a183c7b01b8da7eb9'),
-      (328, 1, 'png', 24, 24, '62300dd458f130aec9056bfa3b74cbded4b2fcb34c8026b2a19c2a4541afb967'),
-      (329, 0, 'bmp', 17, 17, '34d310537bd5b5d5733d2c2b340a20ca46981a55b1454f2a8868b64ee851dc2d'),
-      (330, 0, 'bmp', 18, 18, '7e756e671cea36f202cce81fbe1e3946f8462b6db752550bb0181163b4b3ffc2'),
-      (330, 1, 'png', 26, 26, '6a117d7c0921ddf045de677c567f96c8c357407d939d5a8cb7501b6fc0980705'),
-      (330, 2, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (331, 0, 'bmp', 19, 19, 'b820b4c604f8f8df07ce233ed6de67ccd7b7a43133ea69e63531be4dc72fda74'),
-      (332, 0, 'bmp', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (332, 1, 'png', 28, 28, '4e71c116e20fd2f3032973fdf04b3640eb3d466f89b76a19d58f403614aca0e2'),
-      (333, 0, 'bmp', 21, 21, 'e9f64da99fae8f669369c1c3b9961f68cf910e3a8071c51cea88d678046a49bc'),
-      (334, 0, 'bmp', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (334, 1, 'png', 30, 30, '3dc3dc421fb86254b1795cf2c45375037353cfe8118891011bdef31cd579da2c'),
-      (335, 0, 'bmp', 23, 23, 'f96136caa6ec85c4195276192e13d749e90a380990ee25ac7c9005fef08aa39d'),
-      (335, 1, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (336, 0, 'bmp', 8, 8, '3f422fc324271194410107be4b4e2834d3538b9188499181046f80925e4079ba'),
-      (336, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (337, 0, 'bmp', 9, 9, '6ea0caa302375e011846b7109d6f7a9892cfedb8d506dffa4e6263ead45459d1'),
-      (338, 0, 'bmp', 10, 10, '6c60c0dbd00cbd9169425d44fa0f02f1c587be6bf8edc555e9651bb426a56a46'),
-      (338, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (339, 0, 'bmp', 11, 11, 'cde73da2e96ebe2a311a79d3d32abee76075d5d08ca8cf13cfe9b6ad9ce63d96'),
-      (340, 0, 'bmp', 12, 12, 'be7504b36de4acb076e17d46148178b2a39947f91a65893e02536e10e0ed4e63'),
-      (340, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (340, 2, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (341, 0, 'bmp', 13, 13, 'fa33e1749bc99a894ea89223aa3a19890ffcd7cdb7ebb3448f0e671b4c5a7fba'),
-      (342, 0, 'bmp', 14, 14, 'dae0e6e3c35932c12ad693b879cfaeb0b45fcac23d828dad7bda012b564fe134'),
-      (342, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (343, 0, 'bmp', 15, 15, '191afedf2ba23200d46c045449a9a613dd11b042781c57c31211cfd9b9f48051'),
-      (344, 0, 'bmp', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (344, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (345, 0, 'bmp', 17, 17, 'c91428c0b1ef1cf14fbdea946fe0f071ccaa898b987f7eccc02080d3a31044a4'),
-      (345, 1, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (346, 0, 'bmp', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (346, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (347, 0, 'bmp', 19, 19, '7cf73e594308d96c652b708690133f5ba87c7f09abec64f90fccbd32f6938121'),
-      (348, 0, 'bmp', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (348, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (349, 0, 'bmp', 21, 21, '2546160fc545cdb08dbb1725a779b24d1b147b9a994a8c0725847bb55b23801f'),
-      (350, 0, 'bmp', 22, 22, '6aeb8387c63660c985f5593a9240ff711bda7a6d710ef12314779d7fa8c7a487'),
-      (350, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (350, 2, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (351, 0, 'bmp', 23, 23, '82f7f88a3affdccf2ec705d6e7dff46a0bb0b158d38a23f1cc926ee3ecebc735'),
-      (352, 0, 'bmp', 8, 8, '069cfda8c7639a3d7f24acf85d858ef2516968ca516046f9987ff35176a132f1'),
-      (352, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (353, 0, 'bmp', 9, 9, '8e6d7fccbd98ceabb43b307270f9d1b2cd659cee87000ebec027fa4ab3af712b'),
-      (354, 0, 'bmp', 10, 10, '6489a7a2e16574509b40972488e779ac8eeba8a0cd57d99acf20e493096fd092'),
-      (354, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (355, 0, 'bmp', 11, 11, 'bea3e28d65eea8d364f5413b9433c9918d5ae0c378fd4b70f9c1e43f0aa87729'),
-      (355, 1, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (356, 0, 'bmp', 12, 12, 'a8ab3db38471b305fcc6b9986d1488b826725254602e8f3868c5c5bfa00ca02e'),
-      (356, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (357, 0, 'bmp', 13, 13, '4d49a0439d6f798057cdbfdc23c5f35afbf2068ba5d57f65260152259ea0944e'),
-      (358, 0, 'bmp', 14, 14, '7f6c34fea6529525ed7fe206c4b34db2b76a7b8ee9d257d51c8698181fe0d5c1'),
-      (358, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (359, 0, 'bmp', 15, 15, 'c4199eb92f0dc482de9af932d76b677d8ffce53e0deb5d35c89e958e2526e88e'),
-      (360, 0, 'bmp', 16, 16, 'da86c9930ff5ae34564525d8fcbed06f98b47aaf8aa67b476836d016129b61bc'),
-      (360, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (360, 2, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (361, 0, 'bmp', 17, 17, '87242fc3d4a7999aaa7bd75652aa413bdb05cddf544d92a3daec8b7ff2c85324'),
-      (362, 0, 'bmp', 18, 18, '60cc9337cd2dba452774790e1280fb58aa7a675d3fbee7fab5ae8266a1a02509'),
-      (362, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (363, 0, 'bmp', 19, 19, '4b71cb93a342a056af70f95b504e4cacecfb9708639df2e11b6153723da88e44'),
-      (364, 0, 'bmp', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (364, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (365, 0, 'bmp', 21, 21, 'e7169c46cafe27bb0ab2835735cf8b730c6d435d43db34247ac56e9debdf0305'),
-      (365, 1, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (366, 0, 'bmp', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (366, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (367, 0, 'bmp', 23, 23, 'c23258bb4801fc64e56703792410cb07369929b9c2cfc9448aeffb9245da8544'),
-      (368, 0, 'bmp', 8, 8, '71288e069b17f6521247d5715896308f6b9137bdfe52e42eac16b925ef639b59'),
-      (368, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (369, 0, 'bmp', 9, 9, '338e6e5e89c0404a8780ea5a804d60b2835f7f2df5c56dbc52fea2cc967a5c1c'),
-      (370, 0, 'bmp', 10, 10, '03302d0c754f12a61ce3b22bbd57310f723bc867fb2bdb26c70282be7de4e516'),
-      (370, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (370, 2, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (371, 0, 'bmp', 11, 11, 'd77cca2f9469cecdecb982d8cd605e37a2ed6ba7bedbb6ac059723abca4cd388'),
-      (372, 0, 'bmp', 12, 12, '8f56855cffd4af7857ab539f5f422fade63cc34336785ec03888914aef6c08cb'),
-      (372, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (373, 0, 'bmp', 13, 13, '564c935d0c14584cc12b33c1c7c435c868d72ce88eb5aa2cef8cde5c44f22539'),
-      (374, 0, 'bmp', 14, 14, '12f1a45b98817a9a8c98d041aad75385c891a54653f771ab67185574ef1afe1a'),
-      (374, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (375, 0, 'bmp', 15, 15, '41112aaf8aee044458aba60ec5fbc0a28ca4a6ae098facb72473a8cee1489c0a'),
-      (375, 1, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (376, 0, 'bmp', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (376, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (377, 0, 'bmp', 17, 17, 'a46199de211a6eb8230adc46f636a8e511a780088c6265b9f4e6596bbf647c8c'),
-      (378, 0, 'bmp', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (378, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (379, 0, 'bmp', 19, 19, 'cc71e0bb7e511f83b20712dfe3960e88e9962034143b4d90c3cc269c62089a50'),
-      (380, 0, 'bmp', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (380, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (380, 2, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (381, 0, 'bmp', 21, 21, '7700710c3c0db7052cb89079b06dcd09c3fcc26abcf36f4c6a7e6b7564556233'),
-      (382, 0, 'bmp', 22, 22, 'cbf49f700382d1a54ea8ce46d4c7cd52eb93deaffc68debb358a4a20d5976c56'),
-      (382, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (383, 0, 'bmp', 23, 23, '10d3072922bbc944cf6cf8fa977b0b25c12cd840a5d7d63ad993a8ee6e346a99'),
-      (384, 0, 'bmp', 8, 8, '874e5a624d06682411032b26ed4588e3c0bd6ea8e9d29f5ae77e40edc7bd2a94'),
-      (384, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (385, 0, 'bmp', 9, 9, '175a465b7ad63c4d965c0b8caff4c2d0b23feffdab6ace17da11b3dbd3b09d74'),
-      (385, 1, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (386, 0, 'bmp', 10, 10, '8cb5a2f6b111de783ce73a41a660da582b7009c3c979b63dce51a54c6c3643f5'),
-      (386, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (387, 0, 'bmp', 11, 11, 'beddef1710d971aac7f01947027b8f8fa2764b9a1f9c31fdea3376debcf86d52'),
-      (388, 0, 'bmp', 12, 12, '7e5c343efad934797fdbd9df913187a7e49848fd10910f98858ceedc710d428e'),
-      (388, 1, 'png', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (389, 0, 'bmp', 13, 13, '58e18b3df777d5f92c725c1341d3c0b716ee097dbae7c59f3b9561c509b0a917'),
-      (390, 0, 'bmp', 14, 14, 'ff2a0fdfe294715ca8f983e1509924accbd43ae8f4d8392c8c21e0c54d089a92'),
-      (390, 1, 'png', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (390, 2, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (391, 0, 'bmp', 15, 15, 'c9289d8450634ebde230ee8bbd5a2f1ec29cfe2ffba340c4a14ad348e666f265'),
-      (392, 0, 'bmp', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (392, 1, 'png', 24, 24, '96690ea8d20eb7c78dc6d72976292cdddf1da39fab76a6a3162b3f3689ad1630'),
-      (393, 0, 'bmp', 17, 17, '0671e16461dd257f5817b006378136aa636484dc854cf5d737711c7e977d62c4'),
-      (394, 0, 'bmp', 18, 18, '9f620d0cf803bf731ec5058a87f4065dc8c6a71d1b7232b60020c597e11fc78c'),
-      (394, 1, 'png', 26, 26, 'a782e1782e460375d340506b6dbcf6c448325c067f7a394dec57a9d820b896e4'),
-      (395, 0, 'bmp', 19, 19, '55fa44a354fca655fb6f1093db3a8b4856c1ce92732f4d8b8fa15278f0d475e3'),
-      (395, 1, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (396, 0, 'bmp', 20, 20, 'de1c6f6451f9b875374f3eb1e747a20aae4af20426852813a8f7ebea5bb5a9d1'),
-      (396, 1, 'png', 28, 28, '4f7a7eafef7bfe74ebdc2dccdf76001b90ca1a73212bd5dea7bb9808120e9f89'),
-      (397, 0, 'bmp', 21, 21, '07aae9a145818add59574453008e2be1e6119f6dcfcbc0cdfc0d81414a043193'),
-      (398, 0, 'bmp', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (398, 1, 'png', 30, 30, '619327d629e385c846479a8e63623efd604d9eae49cae31bac9f09843963950b'),
-      (399, 0, 'bmp', 23, 23, 'dee3e16d6f8261055bad76d4f2e3488c133090d8e1ea68f8ecf3856c4af915e5'),
-      (400, 0, 'bmp', 8, 8, '5e8e08b9ee6da5f0ae870469f7c9b54976850da43711456681c5f8a54110b3f2'),
-      (400, 1, 'png', 16, 16, '375c74d4463d6ba96795126c0ca94e60ab7c38c5e7e54ac1411e0eb220855976'),
-      (400, 2, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (401, 0, 'bmp', 9, 9, 'bf1b63cd2f8b2349fd7417b6732c6850f4e02eda6577daa97bcec9afaf09bf42'),
-      (402, 0, 'bmp', 10, 10, '7e65e8db3993736f4144186578fb69a4cc7397bfead33680cbbd72afdd970a93'),
-      (402, 1, 'png', 18, 18, '853e0f4425d9f290a4f7e9c3a91ee7f39fd07a44c7f9690ad6522766b9639c73'),
-      (403, 0, 'bmp', 11, 11, '3f9ca6d58b3d82adf23cdf83453f921f62f0968637ce5df833939992e5c9a691'),
-      (404, 0, 'bmp', 12, 12, 'a493407e2379dda0832cc7158d55440698f6afad65cb9b66792a6b840e956df0'),
-      (404, 1, 'png', 20, 20, 'b07fa967895c1fc832f33ad911e1cd97d34752a3e40618b5c19f4871526f75cc'),
-      (405, 0, 'bmp', 13, 13, '98e60d313f0cc42ba55b0da01135e63309f05b56d507f6462081297e8c271170'),
-      (405, 1, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (406, 0, 'bmp', 14, 14, 'a79b0274ff49f58eb31d9ba7cee35716efcb3394299377bbc571569e9f852cf1'),
-      (406, 1, 'png', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (407, 0, 'bmp', 15, 15, '9a00028e32e3a35b344a8d1ebda74150ee068505dd7580acfd557dd516907a3f'),
-      (408, 0, 'bmp', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (408, 1, 'png', 24, 24, '5c097639903c707fdd73d8163c9c8a69a414e42db9023fc23d713db39b7ae6fb'),
-      (409, 0, 'bmp', 17, 17, '05536b658f11e698ea5d5e7239989f35e9a13d0e9b4a7cb635c01e92bd314a8b'),
-      (410, 0, 'bmp', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (410, 1, 'png', 26, 26, '3a7a6b4e1ae3ef0602e41596a08f548c02b339b4ec35dcf025ddf32396a34941'),
-      (410, 2, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (411, 0, 'bmp', 19, 19, 'e5d9aba837f713d30d3eb0cdce9f0a216809775c36167384fe8e13ff11682d3c'),
-      (412, 0, 'bmp', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (412, 1, 'png', 28, 28, '344dd0aecd088c0a76d0a80ec594df4adc3a7c278e0f1ff1e26716bc8e796033'),
-      (413, 0, 'bmp', 21, 21, 'd723ab7ee5596f67637fa0f9ef1e8f91d6fc7bee3d9c6d8d9fabee6b4213caab'),
-      (414, 0, 'bmp', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (414, 1, 'png', 30, 30, '27490c1e8c824119890e20b7e65e7dcfcaa8cf46a54926cde7b8b229854fae41'),
-      (415, 0, 'bmp', 23, 23, '86a71a721902290b1a1fc7da78a10932d0b26b6b2044dc8f5cff7d4a5ecf9549'),
-      (415, 1, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (416, 0, 'bmp', 8, 8, '08110461458c37a2acb3fc9c00fca69b30113b83728fc727fe0db4dc611b00cd'),
-      (416, 1, 'png', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (417, 0, 'bmp', 9, 9, 'e30011ec5136c62cc39b318fc999cc3f8f80752ac06748dc4eeeaa0335c5f112'),
-      (418, 0, 'bmp', 10, 10, '34b80c4ab949486bf89c6cd6383d0875cc95a61b112dc7cd123887fe33e4e345'),
-      (418, 1, 'png', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (419, 0, 'bmp', 11, 11, '135ae0746bc20a6a98930f2d8e5fcdb442a782b6d239114ad3a9c648ccf8b693'),
-      (420, 0, 'bmp', 12, 12, 'a0a88ea5ed5676df041352567dfe78c07d01ee3ab3cb31254fee690e70b7868c'),
-      (420, 1, 'png', 20, 20, '87819ff1b19dac4b5b872ad9800b04288c41350fe46278d4e4005dc58283888e'),
-      (420, 2, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (421, 0, 'bmp', 13, 13, 'f8d6f42e81320e6525c2ce4059fafdb75babfd1646f4f02f0f2c8a708f427dcb'),
-      (422, 0, 'bmp', 14, 14, '372cfe82b6a66f83561e56848e99347f6ce057146711abb8d9219ca17614c035'),
-      (422, 1, 'png', 22, 22, 'a3f7c96e54c23610ba931fe92663dffc36b9887db4cfb1a46e791c9f56003c55'),
-      (423, 0, 'bmp', 15, 15, 'fbec80be77b295acbd255ba58981b8cd501c9e8eb5f9eba3dce8729df7a16c3d'),
-      (424, 0, 'bmp', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (424, 1, 'png', 24, 24, '7c8b2d4f4b1782b1ea50304d23f86a1d6f9b73865a779cc4c4838c4ac3a59a6e'),
-      (425, 0, 'bmp', 17, 17, '79cea73fffdd12b627928361e1f72b24c059e24cfd6190e16da6b497f3cd3f80'),
-      (425, 1, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (426, 0, 'bmp', 18, 18, 'f20c70ef0023645fa61bfed860b008fbac3b91c50ea9e59f95c99c0c1c57814a'),
-      (426, 1, 'png', 26, 26, 'acd9a543b0733d1fa210d61fd88110d274e94e1efdb32772022f5a5f7c71ebd3'),
-      (427, 0, 'bmp', 19, 19, '9855633caafbdf4b55379174d5f13b671be5a24de4d172cebd91d1671af1ba98'),
-      (428, 0, 'bmp', 20, 20, '4768d99988e30ef8c6804cdd6675b953cacc9570e95a1c0cbd5d745a365f2b9c'),
-      (428, 1, 'png', 28, 28, 'edcdfa048ea6d38d4e688a870c0deb1a5698d8207cecef2df6e2ffc3086b4de2'),
-      (429, 0, 'bmp', 21, 21, '58d7ac1cfb7b961004aa47242df68058564b30618a1fb586ec9244d74f778e76'),
-      (430, 0, 'bmp', 22, 22, '42abd9ec0fa117c5f959c701687a9a7dd159c316a39465d5be23a840bf042cbb'),
-      (430, 1, 'png', 30, 30, '73a3b61306c276beef12776fb166ca13e33a4db553d4aa2fd94465bf2a4e6333'),
-      (430, 2, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (431, 0, 'bmp', 23, 23, '5159fca5ec8b7473bf34632aaa6a78d42a5621279001ff77304eb21eb24e540f'),
-      (432, 0, 'bmp', 8, 8, '22743d7aba4912dcf9337079bf5a835a4e11baaf1c4067df0ec87036b55fc8bf'),
-      (432, 1, 'png', 16, 16, 'ded574b3ad7261f6fcd31c92ceed2d746c855847291c8159b684ca09dbab2f44'),
-      (433, 0, 'bmp', 9, 9, '623ab224375236067d633d3667ad6a172e81c1cbc508e2ad06c4c372a838adf3'),
-      (434, 0, 'bmp', 10, 10, '6a93ec685193a038f5dd65c7bca3c4ff67d45b863f7902c6ad904d48d3112121'),
-      (434, 1, 'png', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (435, 0, 'bmp', 11, 11, 'a9071749e44a5cba74a11ce0e9bc4c2e77cb561c3ffd74ca9106a0f4b3359214'),
-      (435, 1, 'png', 48, 48, 'c10046f75dee1787f07c2c876e3314bf96e663f18ee439c96a5747cd44ed5c12'),
-      (436, 0, 'bmp', 12, 12, 'ca8e8dba97ca8ee10638b9a817b7ebde84038e000fc349095f9359827c859206'),
-      (436, 1, 'png', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (437, 0, 'bmp', 13, 13, '00fb5104578b0b065d9342c6d78a488e46e57d955f11eccdb39f6d9546ba4902'),
-      (438, 0, 'bmp', 14, 14, 'caedecf12ae93096c209d34eeeefac97bfda6a423851bb2ccb91e51de6236e92'),
-      (438, 1, 'png', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (439, 0, 'bmp', 15, 15, '221d73fd8c82f4fea909060027038251d9b4bf52ebca2ba62c2ebd93150a35f9'),
-      (440, 0, 'bmp', 16, 16, 'fa1223db30cfbdd39d2cbadc03e770f3eadf3a02a474de7b3e1e4eb66e1f52a3'),
-      (440, 1, 'png', 24, 24, '62300dd458f130aec9056bfa3b74cbded4b2fcb34c8026b2a19c2a4541afb967'),
-      (440, 2, 'png', 48, 48, '5b8013b43a5485dc557cebe89f574e005a39f0c588634a6d7c619b699cec8ed6'),
-      (441, 0, 'bmp', 17, 17, '08b138e55b2056d5f686052aea6030f2116a98a30080accbaef2eccc7f652106'),
-      (442, 0, 'bmp', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (442, 1, 'png', 26, 26, '6a117d7c0921ddf045de677c567f96c8c357407d939d5a8cb7501b6fc0980705'),
-      (443, 0, 'bmp', 19, 19, 'e248343c4316f2e6dc1c26539ceb89ca9ba3ff8d3974d4bf99ad5786e54c61fc'),
-      (444, 0, 'bmp', 20, 20, '8d1b6215cf9b7b15dd473ba8848b9fd676cde05cc9c67e6cace5ea7a3174e669'),
-      (444, 1, 'png', 28, 28, '4e71c116e20fd2f3032973fdf04b3640eb3d466f89b76a19d58f403614aca0e2'),
-      (445, 0, 'bmp', 21, 21, '3add5ac1074d1c3a07df2bc89a91ad23386b163af438ecb90bfe3a27e23a68b1'),
-      (445, 1, 'png', 48, 48, '0b1b679bf096c40bd1d6e45e8c56cf889f320de6a799b9e4ef3665ad699866a0'),
-      (446, 0, 'bmp', 22, 22, 'f3adbf584ec02a9bbfd0ca06f9a397cac84102927145f0c8618d122ff72e2aca'),
-      (446, 1, 'png', 30, 30, '3dc3dc421fb86254b1795cf2c45375037353cfe8118891011bdef31cd579da2c'),
-      (447, 0, 'bmp', 23, 23, '47a40e3261737f692faa248d2db6d8762c835e64b11574b1459dd57288998aa7'),
-      (448, 0, 'bmp', 8, 8, '1697584868a5ebc80dd9c992258bd033f233dbdfd5bdb6d0074c9a3de4895584'),
-      (448, 1, 'png', 16, 16, '81db086421a30a6215ac2ae73bfd44739b0e6d00791a1d44ada63f55edda82f3'),
-      (449, 0, 'bmp', 9, 9, 'ef4423cff00e53555c0be088db4c3bdc5390b1218428c6b833aa4d744f101fec'),
-      (450, 0, 'bmp', 10, 10, 'ba28d6de74d9a2b40d12e7e79975737f32712457fa5ac5d18a66cb9f71ea75cc'),
-      (450, 1, 'png', 18, 18, 'dea5c55611cb54dd4cfa3615c4735ca1d66d7ad5fabc05820bbfb117b85569b1'),
-      (450, 2, 'png', 48, 48, '189a2fa9e4ad2981c4a128868cac6bcb9b0e130b47d2a7b5a8650328f94610a4'),
-      (451, 0, 'bmp', 11, 11, '9a59234f82501f3579ec5728ba8ced4e2ae4ed8e8187c992546e562afd80330b'),
-      (452, 0, 'bmp', 12, 12, 'e5110943a93807d1deb2fbf0b8d6c10a4adec63b9be2c6e5d2427924ed7cae3b'),
-      (452, 1, 'png', 20, 20, 'a3eaa7b3d69cfec2c1359018a84fd3ba126ab35605651620a6f503558591246c'),
-      (453, 0, 'bmp', 13, 13, '7dec995b8aad9bda9d341ddc1d7fafc4f66d19b782c0cec3cdc44e6a2bf4f98c'),
-      (454, 0, 'bmp', 14, 14, 'e18934118c2e74281ad49f651a66a9d48b4c1c36874b11fac60be5882f9217e6'),
-      (454, 1, 'png', 22, 22, 'e9764f7422d94afb950515d6deeccac5148ffdd6cb724e50c186483f713b6a63'),
-      (455, 0, 'bmp', 15, 15, 'dbd6cf0c43e0582924a320002827225c06fe79f73ba704484a6cd700908b62c1'),
-      (455, 1, 'png', 48, 48, 'e949b3a521bb63edb4fc5c28caf47e29366ff1f556cc4fcc4603d0b7c54b63dc'),
-      (456, 0, 'bmp', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (456, 1, 'png', 24, 24, '925d3b3bb944eaf0c6ad30f3ec40a6fbb5cc21975dc76b499164fd2755363ec9'),
-      (457, 0, 'bmp', 17, 17, 'debf84b9957bd7ea70a9e380517e217e0fd0470c14ad8b52eb19c8d2b1d622e2'),
-      (458, 0, 'bmp', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (458, 1, 'png', 26, 26, 'aac8cd2ac92ecabbc9d06b14094922083fe2691d381bc252286d5cfc2c2553ac'),
-      (459, 0, 'bmp', 19, 19, '1b8b067a98a9109fcc967df364f929b5f6a5001ccd9769a4cadbd18e3a9c461d'),
-      (460, 0, 'bmp', 20, 20, 'c03470985af840d9fc82905c60065a802766226903c738adb68631630ab3fb99'),
-      (460, 1, 'png', 28, 28, '55c4c04e309b90b22f0042232ce5761c54a654b14588ed655d0a25d46015ccdd'),
-      (460, 2, 'png', 48, 48, 'e185c40a276ac7b57491a4c2fb45c41f9b5209828ff23672baa6bb9509ef390c'),
-      (461, 0, 'bmp', 21, 21, '62ee8c56a31dbd897793dd3d1556ab6119afa596df1b993d7112df1add06cd1b'),
-      (462, 0, 'bmp', 22, 22, 'f4eb1c2a2630260cd4dd9f03672ebf137419e65738ab96027a6a14e0ca9257d1'),
-      (462, 1, 'png', 30, 30, '988fab892723b86f2f153a31623d7a68bc607ac3644856e98922e28f3a58b1b6'),
-      (463, 0, 'bmp', 23, 23, 'f0c35053017cfd416af840e020f550283bb5df3ea8788ad0d29cd46ee511029a'),
-      (464, 0, 'bmp', 8, 8, 'b6d969c4aed4371f4d343bea874ca81e1a5491a280fcfbaa999d8bb4abef51b8'),
-      (464, 1, 'png', 16, 16, 'a14cd3d2170d01f04c0d883b774f55f2260678525698c4b6ac4c1c2fe9b40ddf'),
-      (465, 0, 'bmp', 9, 9, 'b084b58c8d215868c587e6cb2526ab13a938198251088a7a31602f7c19a6e65d'),
-      (465, 1, 'png', 48, 48, 'ec98eed37016a6b40e0e93e566e591202eeeb8dd3262b718ce640b7fd44d91e0'),
-      (466, 0, 'bmp', 10, 10, 'cc044dbb47968714e2af67794b40484e2a0a09efa340b69d7aea733d4999ef17'),
-      (466, 1, 'png', 18, 18, 'b0835ad2edb4e81879e5607e2e657a6ea7ae6a7bcdda84dcac569ff8c371eb13'),
-      (467, 0, 'bmp', 11, 11, 'ed54d2d82a7a9c4593c894f8ba611f3f69a8fb60e49721bcc1541b1e82341f73'),
-      (468, 0, 'bmp', 12, 12, '6c930520969bf42a475bee30d7e6e2426d7ab3d8204ab1c7fdf583b0f5ccc49e'),
-      (468, 1, 'png', 20, 20, '9a1fbd0bb43dfc1ceb6f12842eec33fb976e64e7147cedbd1d36b4d7678dc12f'),
-      (469, 0, 'bmp', 13, 13, '177065014847be83b9d949694cc3bf2eec6baedc7f1776c4f2ff227e4eb9df73'),
-      (470, 0, 'bmp', 14, 14, '490aedd3f7e5039e43a7c0e8d79212dc00ce27ccd66d0a7801b96cd69bcac260'),
-      (470, 1, 'png', 22, 22, '5956c7533ee34fd3d083b69376edd04d0213962a5b2f416314be8af0d05513eb'),
-      (470, 2, 'png', 48, 48, '6eeb2a8571c4861a464e6d70262254f613e944085e48b5d92aba8e6dd67e00f3'),
-      (471, 0, 'bmp', 15, 15, 'a9e9661f9e2f0ee77b3911f2e7bba08708a5da10f56fe48ad224863c619ca914'),
-      (472, 0, 'bmp', 16, 16, '152cec2f9a8b9eba63634b0365bd006be1b0c0d1aa3a685f05adacee63f79b8b'),
-      (472, 1, 'png', 24, 24, '16d99af7acb2ccc28df552b1c1f14819581ee01d7def218857f5dfe2f4050122'),
-      (473, 0, 'bmp', 17, 17, '66bb486da93d15bec029309a47aeed3b012c486f3c1b1e6e7378177b368d98f2'),
-      (474, 0, 'bmp', 18, 18, '6b9c4b01346938372dff5ffe569e82ebc5892fdf9c4d8f308211a7cfda695a5f'),
-      (474, 1, 'png', 26, 26, '54d742aa559bcb7d281dc2c704cd0e0e9e7df6d65c13a68a3c54962106c54608'),
-      (475, 0, 'bmp', 19, 19, 'f59d6e514e32a74313f2d42c58d2e05f4dba7c24669a4cddbaaf27e30d92fe4a'),
-      (475, 1, 'png', 48, 48, '7750d9ffbdd3deb3e2805a9c66f7ac11eb72645324071a8dd17e27308301f5ef'),
-      (476, 0, 'bmp', 20, 20, 'c86b5841f2711cae9b329849b4ea3f0b7385f48bdc931b94f6f662174bdd61ac'),
-      (476, 1, 'png', 28, 28, '438ceb6da589e571b91a1a422af64d3ddc6b4d7383ed3c4450bf323a28e4952c'),
-      (477, 0, 'bmp', 21, 21, 'bff0069543398b616610ee94c0aac20033cafea6cbd0f1442437dc2bee06272a'),
-      (478, 0, 'bmp', 22, 22, '3989d8427d05c70e487c9f510e2f3cb111c4340e6320b363c6e4e7868c72b6d6'),
-      (478, 1, 'png', 30, 30, '1a1ef29f6f0bba05945c4e02bb5f0e453a63668ea14d07d44fc4961b61dd3659'),
-      (479, 0, 'bmp', 23, 23, 'd318d18af78a730e8caea728e6d7d49d3acaed501885f059b8dfbe7a1ca0d0f4'),
-      (480, 0, 'bmp', 8, 8, '0d37d34a76dce11f2abb585ffdc1ca8678e11108954a4ea65a6a58273b2a3b7b'),
-      (480, 1, 'png', 16, 16, '02030360ecd4297cafba75418d0a83add88fa886f1b5e2cf3992b61f7e40be05'),
-      (480, 2, 'png', 48, 48, '4c1cda258b75019096f8962395655c07587ced2a0cdc44d288a2c1736a5c2493'),
-      (481, 0, 'bmp', 9, 9, 'e71402f03b19e6b3fd74efa1dd42ec79755017445abd19b6274c0645e208d55f'),
-      (482, 0, 'bmp', 10, 10, 'dc6d29506c18452f5553085d2180ef3a09af97236a5806e85d5109b52bf1a99e'),
-      (482, 1, 'png', 18, 18, '8d14c38e9e0b8d266d760f44dee4e9866c90906de7906b9a0a91f959ed0e2684'),
-      (483, 0, 'bmp', 11, 11, 'fda48a00ddfcc19bc136aaca5e047ccf8fed82c95886fc4538c15991ac366676'),
-      (484, 0, 'bmp', 12, 12, '972693347cd0f05e3042ceb9340704863c292651f355dc5071f31ca84b01d4a4'),
-      (484, 1, 'png', 20, 20, '4bdbc7f0923c3180407f6413fd6ae24ab4bdb37bbbcc391b23c9d577310367c7'),
-      (485, 0, 'bmp', 13, 13, '98e3655dbff81e40787f33402107d51f6595a664034caad27d3b1d2770746b5f'),
-      (485, 1, 'png', 48, 48, '9d65a07087b6391d79aceb39da37b855b5a696d46a2769099315168187a87b67'),
-      (486, 0, 'bmp', 14, 14, 'b127aae44ddda382bd2597f1c7ccfdbcf5b1a234b8f9f3d7a929c907c1374ea2'),
-      (486, 1, 'png', 22, 22, 'a93d1f2b0e0eab907b08c786308888192c7e3840f42fa462dfed3cb7079e3893'),
-      (487, 0, 'bmp', 15, 15, 'fa707f76b4540ef4f9209ec52971e1680935745496874c68b9a516f852e04517'),
-      (488, 0, 'bmp', 16, 16, '82771c5c82f5e65d4eafbc234fa9ddd5ccd08bd21f65bb940a06a65cd4698386'),
-      (488, 1, 'png', 24, 24, 'c107035fbf460de163579ec8f166dc8f6413a95760af1816028e53b310576027'),
-      (489, 0, 'bmp', 17, 17, '952fce4c5028c749d51d29121f55ac2803c2cdde6d012a514eb49dce6e1ea90a'),
-      (490, 0, 'bmp', 18, 18, 'c2f40430c26e191bf2831e8e249dcbc9d0f8fc9a3efb992588490d52ab13a0e1'),
-      (490, 1, 'png', 26, 26, 'ca33e3cfbba2b3e7ad2fce83e553d453bfa73cb0f96bd810820a7b56227b3e26'),
-      (490, 2, 'png', 48, 48, 'e531cb983b1475e8fea9e9e3991f523009b2c0817ff5dccd650ab5d0a4b7fb48'),
-      (491, 0, 'bmp', 19, 19, '7eec444c83989db49958cd693b71337683259a34e9f51d6b10d3bfdfe2f6b8e9'),
-      (492, 0, 'bmp', 20, 20, '8dcd5e3fe9259afcd4f1defe8d7d3e345da6c6035cb9350ed6d7716d203321cf'),
-      (492, 1, 'png', 28, 28, '41045b33df1c57e517a3e036c53aadc025c175e060050d17252b1932abfa21f6'),
-      (493, 0, 'bmp', 21, 21, 'a376d66a0d97824c411de54ef657b48a06c50b7b9e19e9fec7e96f0b586783f1'),
-      (494, 0, 'bmp', 22, 22, 'e9d6040ac9d2258a01f5d6e691c2b4addea78e67164fa61e6a724a0d35aa47c3'),
-      (494, 1, 'png', 30, 30, '1fe6fd500686de39dc1d51aa621a604326d0ee8141e41e62b435933c27740297'),
-      (495, 0, 'bmp', 23, 23, '79770f050285fbec1b8f067150baf852633e80b54dfb0bdc18aeb4afb2c7db80'),
-      (495, 1, 'png', 48, 48, '4331abbacff9eaf8af27ea00a04596bf4856bfea774be0036679d3265a09cbdc'),
-      (496, 0, 'bmp', 8, 8, '9c35871ec98e27d110ff1c7abb7e490be9455625aba8878316e477629f581438'),
-      (496, 1, 'png', 16, 16, 'd5d0233ce9e45a5a2ed279925a7b3f2c335691f114b3468ae849f475acd1b3f3'),
-      (497, 0, 'bmp', 9, 9, '275bb996498b534a90bde28564667c70d0881fcfab78739d9c941dc48da34e4c'),
-      (498, 0, 'bmp', 10, 10, '06b9e48c807013f44bea00adba7a1d815a84aaf129eb52d115da64a97c692b0b'),
-      (498, 1, 'png', 18, 18, '8f025fdbfeab660f01f98635897c9c6e2b4c668faf19a5fce4bf7c54950777de'),
-      (499, 0, 'bmp', 11, 11, 'c15ce141397fa95e2966182bf8c25dfba87a7202ce7d4615446d1bc83c600acb'),
-    ],
-  },
-  'q_grounding_boxes': {
-    153156: [
-      (0, 3, 'caea72b495bc403849df58feecba6ac93f32c2c02d2608cc440777daf74ac73a'),
-      (1, 3, 'b94d21209ca6421faff19847d2c3d81c12692098cb83d4aea6565b19857d5dce'),
-      (2, 3, '7a09aade6082facb176610534a047fbd76de09546fad94c6afe6dab4469d2b4b'),
-      (3, 3, 'd57fbc9143970cf844a3a9f52934f683f500db2a20623bec1af22253ca67b305'),
-      (4, 3, 'e2a5b4b819da9c36cc6581557a3771b85d84be58c2d6155f02469a1ccde7d9e9'),
-      (5, 3, '148619b8f176a3e0b2502007c0ad711edb91487cc59f17d875a22821cec4df27'),
-      (6, 3, '5ac55b699cbfe25628b0a0fde7beaeb80d4e7dde53d7aa709bdf3a1f81bb1eed'),
-      (7, 3, 'e8f4786b122e2680efd7a16b6225b0e1f50f0fd17117be753d75d9841d5b6b03'),
-      (8, 3, '51e487e3c2231a5310de86f8493de5c4f5edf60214fc216036922f6666b8ba19'),
-      (9, 3, 'd8d0dd73be4fc56722f01fd8b8dc70f3dcf54914511d3019eeca117014861fcf'),
-      (10, 3, '9f7c2295efd4127876c3ec7b90e5f34de0e4b05c7b9646787460ac492244fd69'),
-      (11, 3, '52a462f0cf5ad675a874f06c9877d5192c97a3e7232c3f225c99df385500a6c0'),
-      (12, 3, 'f693daf3d192ae1797431842ce02d21e28d269e8ef4ec53336c8ec98940e84d6'),
-      (13, 3, 'b381b74d7315b0657c0a61a1a73f754ab1439a6184312638674b844286a4f0b0'),
-      (14, 3, 'e70f5de15ab5d36e4136f005986670198dd15a2f680b1da264dc05544616bdf9'),
-      (15, 3, '8a7cddf69eb85189d93da99f1f54001c2ce1c1cd006342540dbd1359d4a12096'),
-      (16, 3, '5fef36aca8c9f3e909e4e3eb754663aca0472aa8bb3f622fe57f01a99c40177f'),
-      (17, 3, '7c18bad4dccd2745f8b119205a9ec46d9fe21f97b01bafdec56c4f7534a2333a'),
-      (18, 3, '9279a03172d429c312c3b016267892680b3e64ae80d752af3ec95d9417023b0f'),
-      (19, 3, '519ada4fcae2da8f1eb93bc6c54d225ef404007a7bd6bfd57b9218622dfea7e6'),
-      (20, 3, '8bfe2342f2a42765c81ba2c0cf610090fb5db34f2530b70fa8e9bb0bd6ca6a9b'),
-      (21, 3, '619044422f8f4f463720df58e6a8b5a4278652e18fca43cbccfddc42cbc25625'),
-      (22, 3, 'df520461d62ff99d00c7bf1b69c26f41dc5077a7047bc5a93f50179c23666391'),
-      (23, 3, 'ad50c8833fec507a6477cc0f6be8b17a80bdac633f2e6c54eb37db0f5e4bc5c5'),
-      (24, 3, '7af8d8b96af9a360cf5aa0acfbb09c473d1e20c6977201297f768ae88152ccbc'),
-      (25, 3, '407e196069dda784e3808b86713f0009f41161ac320b5b6b388eefac7f8c40bd'),
-      (26, 3, 'dcd984019fa6454203ea634adb4e9580374318407a3dc759fbacd551c2ac895e'),
-      (27, 3, 'b40fc4c07743821df2162a2e77b892ce983e119c67e84c1a65a1a96ebaed37a7'),
-      (28, 3, '2f8e1e7a62234e4a7a4a5f0ecc97e4468cf487f872aeb9072e8561f9fecebe39'),
-      (29, 3, '71b6e79fb78e7f225301731113035838e7b54918f7e664fe025fc786c01d1dda'),
-      (30, 3, 'ae618607d1f320819d599b3e4000f5e56405413758da81577f77534e5b12a924'),
-      (31, 3, '2787144d6d91f31d182805bf346a7eee148c1c970d458249f956b649fa0a8d81'),
-      (32, 3, '0481348d1aa746063bea4a7ea2c19c3fb3109294c7afddec083e8bb4cb69a4fe'),
-      (33, 3, '717ee6f6fd31a73563627e8c3969c8c097832280076eb9efff753cfec5e8e18b'),
-      (34, 3, '83c654831b4fefc5c459b5ef28476335e461d231a105f3b1c8c97a5033ca510c'),
-      (35, 3, 'a53cfcc5a2ce1dbf086061052fd6566d2f74b41ac54728e03a08ab9bac358682'),
-      (36, 3, '42a3d575c0f790dfd5496f3209f82aac28f3dea9b674ac0b3da28d952cd629da'),
-      (37, 3, '0f9da15af83643a98da525cfbf9f0cff1613bb8d0532eae4e34ec221cd7dc3d8'),
-      (38, 3, '10bfd141686cb7e29cc2bf85d186f20523f7696d5629a930ccd24898c8837c26'),
-      (39, 3, 'e666306d70573103eade0ae52a77b77fbcd326c8c6ae2432990204b8dc36a5e9'),
-      (40, 3, 'e849d9c297f989a0060a0d6e436b2f41eb79ba2a0979e54a1016156600d5fcc5'),
-      (41, 3, '734102f17e507078790e042bfa754cc429aef9ec2778fd0d5fb67e06e1673716'),
-      (42, 3, '6e906520538a849c2ad27b86e7e3f4e52fd4edf436d550169921cd6904ac4a2d'),
-      (43, 3, '3296366720ab13fa2680a44c304e91085ead3eddf71e86bc9a80a7a326c05def'),
-      (44, 3, 'f43b3f38567960a1a63f328af998ee9e415dcccd28da9100509fea99eb8540da'),
-      (45, 3, 'd9fd8f91388fb1c391c477dca83d9bf02d034a34a77c293eb204c3d8ade9e6df'),
-      (46, 3, 'c2896fad36284666f7f93868b69c9c892f067f5cd716be0d42169346bd4e19da'),
-      (47, 3, 'af7ae2ee674f93fb954a7327f25e6879ace4711fb4e9b8d03c6b81065157a132'),
-      (48, 3, 'd1be9f84b060f9c290da5e04f6915083d689412f9f2834a8563b414edf297184'),
-      (49, 3, '86429542aa0e7f91bee1eeae95e6a4c78d4ba9a512f5030506f62d9c8b18da17'),
-      (50, 3, '2c612304e9f5668cc42e2f2d15216c37d0309b5874e4b7b474c6d31aef2880f5'),
-      (51, 3, '3ae929bd85f34babdec0bce346c16a53b6c883fabf15e1ade7682392128dd40a'),
-      (52, 3, '32926b86f5fdae097020b3453eb286b5c03c20bfaefa5f3c6fdbbca9438db741'),
-      (53, 3, '1e0979e4e8a46616b7037ee078b95a62fb5e690805c5a6ea89bcf4424915a9fc'),
-      (54, 3, '982766f58b639e021029ee074c91003eae01e9216e3103c7ba2135041aa8497b'),
-      (55, 3, '172f2ccf0ee98bd84f7f32f9c7776be8bdeacfbf80cd44bcf8998b7f63855727'),
-      (56, 3, 'c8f1d9c2b3d0ba74f4661f6049d802d42b6bdc748550063adaf14ab2d5777406'),
-      (57, 3, '94fe6fc24bff5913ee4b73054cdc08e8d0e4b575ebf5c0004066e965aaf17329'),
-      (58, 3, 'b858ca2aca58a73fad2cee617b661501694fcf44bc861e68a046607a89b32a40'),
-      (59, 3, 'dcecd136d170e63d01c95a1c94b891fe0a2861197ef2b3e2218058c6d991962b'),
-      (60, 3, 'ff6437c82da78d023f635e008f3c40a36348471394aa64bb61217bf9d9accbdc'),
-      (61, 3, '22b046b06f64335d3163fa195fb8c2557148a5c877150aa8880b08369ac67488'),
-      (62, 3, 'f561d763c24b373b17cc48be03b82895dde254e41374bc87aa1b226b868b1854'),
-      (63, 3, 'f5c1cc0f30e247680432a2a66d78e0764d0bc2c1a78ebe545e8ce6aa15828406'),
-      (64, 3, '22a702db5695fb589f1f5f742b973f9629573315bfeb1c30a6a2e60b7d217547'),
-      (65, 3, 'c54a8e60c71e352dbbed9135e3a47d89c917d184cc4310abd587dfd3b93572b0'),
-      (66, 3, 'd0d977ea526bd071ec905243b02df7f430925b8e6beac7f3d9dfd9aaea18d139'),
-      (67, 3, 'f8fefffeada48e542ff0cf1bedc6be9983d234e187e58f616faf87e5654c8659'),
-      (68, 3, '2b1137d823436d307033d74b037fa4c635e19bad133f786534c4c422c3fac34f'),
-      (69, 3, '9fd4b57ffb0744e81ab1d9b5214f9a906bf22a936a70e618246862b1b72d2100'),
-      (70, 3, 'f494527c49affb4c724f6f07cf54388624199b7928be05adaed2c719e333414d'),
-      (71, 3, 'fc8a5a12df62731279d84b16d7f4a167da1c7d5cdff12a4902f9f8aebf1a1fda'),
-      (72, 3, '51398f2feabd6711773e1df61e691b79381b62b87ec7f26ad716e965442c73cc'),
-      (73, 3, '3e2336dc385cf2d38004ab1418eaecedaaf7af4a8f1a270a7b23f42c7abdc8b2'),
-      (74, 3, '6482f1f2c55e7bfed26a6f229735e2c1e748fd2f76c41c67159b56ede8de03f2'),
-      (75, 3, '6622f075bceb94cfb89b6eb017cbea32156872cfab28e823e29ba46cec198122'),
-      (76, 3, '9478ba5a18081f3988f659b9be842e23b0ff091152a2cd82d99ac3ac0ec4d1db'),
-      (77, 3, '1fac77de58a593dea83e51b760014975b12ab2e11ac0ea743ee9ea1b3f2cde72'),
-      (78, 3, '767a1364ed6e78438b2412ceb1d5b5a08205b0b0933d43d6c7df35f6f90c3995'),
-      (79, 3, 'acb2c16fc77bcf494a0e4f559b51bdfd4aeec6631fc2740a44362408ccaec8ae'),
-      (80, 3, '498785f344f4ea103dad49a2ba50d56492080a74f875efa503d31f42d2be1e03'),
-      (81, 3, 'f4c09c088c2b5989d79015bf7005974b2f3210977d3f264ace240911b473067b'),
-      (82, 3, 'e75641f31c96bc79c45812d2104632ad0cf0f0f448c41ea06ba761be5785c98d'),
-      (83, 3, 'e805ff402af3a6886d6727e9b6a7ebcc41eb81d172fcf6c60bf7d867d07c41c2'),
-      (84, 3, '1b7b85c4bf602dd07553a0a4d0c6711b7c2414a80b24e04e341a680af54e0021'),
-      (85, 3, '6d6e70c43035f8a13177b1658fabdcf6f742c9f1d3afdc52b0ea17ccc8241f97'),
-      (86, 3, '995a56a7ccfad8ac87aca1e75084c8a68633b7f77d83c4d72f01775ba606e51b'),
-      (87, 3, 'be4511af2b1c6b851c3750404198e1bd3bd065eda0532689b66ad294fbbb2f94'),
-      (88, 3, 'a1f39437a691f188a4bf070f3bd930cabadff963ac70573b0022adb0179b744c'),
-      (89, 3, 'fdb891f068f361ead13e4721c98b308b06434de4d167201ea0e27abc4d51ee28'),
-      (90, 3, 'd9a087420e4598a1685d2402bb291aea0f23ab37f509150fbf1f13c709bd687a'),
-      (91, 3, '56a33efa352120c7bf78b51aa8cb1bcdd2f18ea44ec174efbe154b888d3a12ca'),
-      (92, 3, 'f9679874b21110cec35cee5555d5f0f0f3fe523b4c8d85d1857496adfc1179ab'),
-      (93, 3, '68821e04773d3d9121e83176ceb643e0386da9c3a807057a4c961bf90a16794a'),
-      (94, 3, 'fb697221360d6e50a1274f5f80fda88c4bbd11e530196c8e0f320a3e65a8d322'),
-      (95, 3, 'cf849b293533158ef989e31e50a30e000392cc4dfba272fb21c492d77622939b'),
-      (96, 3, '07c9af47160154b2cd9e1f0225a385ffa056c0536dd677b8f47408b2469efb73'),
-      (97, 3, '74eb32dae14d16f4308e0c43beed51c30526134576bc18b877a99f31e3f889f4'),
-      (98, 3, '7981b56b95164c4970a380507cd8421c1ec951eea751b66f253e0088c367eabe'),
-      (99, 3, '63fc7a34bab2da4aeabd9a82dd980c89d9de278fdd9a1645d2865b386e1ba54b'),
-      (100, 3, 'def26cea2850faec54862efdc56d27c36ed1a22a3d0e8330ebc6205dfcdbcbf2'),
-      (101, 3, '96c7f8cd5e51e627644a9c3ad15b05952ee3eee790169d9a6812036fe858953d'),
-      (102, 3, '520e00ca7bb45189e863d7997d16e13796957927c0cd6433bdafe6a57f461fba'),
-      (103, 3, '938a898e34fb80a650662524e307e0582c5341ed2feea2493a706672a472141b'),
-      (104, 3, 'dcc867b1ed027ccf382e7b37ce1400170a851b0833279c617dbdbbae04a604c4'),
-      (105, 3, 'f51cf7200884a6187d1486016c5782d306a2713389a0ec3722c813fc07f39b70'),
-      (106, 3, 'd4e9572e6c702a7035a8305ece457ccdf69fcc80050763633ae2be26b0e6a07a'),
-      (107, 3, '10c48045bec34c31964acfc3a190045dddd657c58a1be3f92d4f882155819dfb'),
-      (108, 3, 'c1ee0218c1197b5e4b87afd244e425f675b15a2551a093ba18fc2f0c26db3873'),
-      (109, 3, 'b269c8d5f8af396a9f18fe1dafcfc0ea2649cb6a19ddd8b632549b849762cce3'),
-      (110, 3, 'be9a3a301a4935cf903ad08e5ee7a12f3a5f93e085376ea72dc42ce1ac00beeb'),
-      (111, 3, '4e178cec9277fce737fb0e1093ed4bdc4c4060e509bf52c6f9423c8aefe507ea'),
-      (112, 3, '26fffd0c77de61d49875c83f6a259c0b1e721b30cd257170acf8f8ca23f27273'),
-      (113, 3, 'f8d701ddfc0e0941ec750b1c210156d19400413089ddae82c927cef78dd1fa1e'),
-      (114, 3, '99a0eadb9ce8e6560eadb75196e1a8885b7a802ccb9772419767642b15b60bd6'),
-      (115, 3, '2d06e22f32d4a961ac55703dd248ae6160500a84265ad343a2f8a9f79b4d74e8'),
-      (116, 3, '729374bdb748a99c232e65493019ea9f55995e91854b823643aa54d0ac5d4dcd'),
-      (117, 3, '42cc25ef39f0cf3d226486ba24ef2a15e691b98eabb54ea74b82820a34ef202a'),
-      (118, 3, 'd4e01353c16aaa2f96da0e906078b6443a372410b32f206132b9b5ff3e067c37'),
-      (119, 3, '46b159dc6223f32d53431314f9a7ad0edbb145c5be1e633469890c605b31f551'),
-      (120, 3, '63ecaa1b2a1aaac97b39dce47246ea3347e9779b736421f3f09fc17a732c09e4'),
-      (121, 3, '0701e174241e873dce4cfb36d02e1966285b18846c0244f1a8885989faa4f288'),
-      (122, 3, 'da4e91327f9882461e787179e7fde78eb5d2098ade7a3fcd655fff0d4572d000'),
-      (123, 3, '9f3b8abff670150384990f5160ae2327041fd8f627dcdb3a5f3a29e4098b1036'),
-      (124, 3, '9efb354214675973c9e1c2d9f33d007087db82e68ec8d8f32186270993d579f0'),
-      (125, 3, '52b65bd5345f8ec5353c1fb9cce38ba12bdcf2d72c0ff764746578ff3d024089'),
-      (126, 3, '766df351afa07608b0c12c47da3962eb4140201277b2e5df405e37d4ba54c8a1'),
-      (127, 3, 'e175561a847e9364eb9b97c356896d9ba01917ea88d57c7b868d9e7ee4e8ab23'),
-      (128, 3, '6af4dd52fa102fa62cd3701289ba884c5d6999f4fea89a9aaa2b9f4b4f1ef4d3'),
-      (129, 3, '5ce478f095bff5c56df741d852e8295efeca34ea7eb55ad2eaf7e9dc2e485e60'),
-      (130, 3, '498882d53fbc480fbc09094c464982389611f51e1493413e633609b51d4fbc18'),
-      (131, 3, '2d25c4e2b4ea7315536fb53af7105bc82476041e85e33409a13a2f6e0e49268b'),
-      (132, 3, 'e42ddf0b9e58e48f681505d49c2493859d76f117185ca0e2d4ec5f68e03f53e8'),
-      (133, 3, '0e34737fc28bda310c54ec13324da394da1d0b2d7e7e77b381f5890546dc3cc0'),
-      (134, 3, '4d75a3e264e972eef5a25fd1eb853b72eea250b49b206ae0333327330fd082dd'),
-      (135, 3, '3e8b82b4462cfb174940a482b8a684c7844237b986f50e3339b243871246fdd2'),
-      (136, 3, 'a40c8b0a938b6284115d31e55d4e85101ae5568f48ac14373d817fe276c66072'),
-      (137, 3, '3fe8a2eb0bd878f5af0ee929a6a8995bf8075423e3e5543394bf5bac7632f2bb'),
-      (138, 3, '267b69199bdcd2bbfbb89382b51c0c373eb4b5050c58c1f67cd99428c691edce'),
-      (139, 3, '74b4fcb48771099b0eed128bd55d97ad2ebc6686be290327963ec14ac3a21a13'),
-      (140, 3, '081b0c89bb1d098864ee31b24b5a932983a0131e5ed6b8f133223aa01ff1fa45'),
-      (141, 3, '4568fa3e4d030311ce19430ea42c81a3f47cf97a86edad53c615fb6c2a090997'),
-      (142, 3, '0f54bd4a1fbc5f30b649c6aa13268fbc37923316d5db82a83b0850b543b680e3'),
-      (143, 3, '0fa40fa76f718319c597a8fa757ed415fda8ddd59cebc97e4c546b2c4fd669d5'),
-      (144, 3, 'f16035e4a46f319adcbe0e6ed200366d817b96ebdd511458d1b69a4bfca811e7'),
-      (145, 3, 'ed679aca14f28faead096a9265177319b5aa381ded9faebdb73a745d94eddb90'),
-      (146, 3, 'a8f992f4f55282027bf172096e4571080e65c43a39dfe3275e4db1998707611c'),
-      (147, 3, 'e87643ab9c263cbf9159f7dfb262a157080ca8a8c8f5533af7ee2d80572d44a9'),
-      (148, 3, '875224976de432bffb674aacdafb25e633026f1e9b2263bbfc97ade91b7e648b'),
-      (149, 3, 'ce465501a61660702f3a6bd663033d682c092beabedb93dc9331930f1a2aa982'),
-      (150, 3, 'dd0cc8221fd2928180761c191ad06cf9e835e1e0b11de749b9364cee0a3ed581'),
-      (151, 3, 'cd5745285769d29e1e7f53af2a13181ed491897307d29e3c60712a879198e268'),
-      (152, 3, '29fb80657c6f4f9b05fe5a58f89ca62779704449250bf4734d7df79fdbae2285'),
-      (153, 3, '4082fd6e010e6f9a1d6fe937d57805c6b10693fd22962a46b9efbd4f106d31c6'),
-      (154, 3, '420c5f745bdd31942ccf8d21ac42b685dae3da4d0691cb59bf6c51d46e231551'),
-      (155, 3, '93d8f2b726f70f30817a747d94c0405c527b0eceaa90761ac1fe1b652e54a4ef'),
-      (156, 3, '9ae1932154066861cc5d026e266b15f32ae5e3d669531a46a212ae810c760b61'),
-      (157, 3, '283007a7c975b23fb4823e7b556dec78cb99530229dc191652158b2142e0b0bd'),
-      (158, 3, '14955aefa2cca9cbe19df6f9ed7fd6d6b0907babed7ee6f01f9b7cbcd349a8ab'),
-      (159, 3, 'be39ae67b90c095756fe6b06b85321de80a9a5d786cfb71d149e74f2ed07dd8c'),
-      (160, 3, 'feff9aea7207b7a95d6150ddcf74da290add90d992f85ffa2f34cd02324e19f9'),
-      (161, 3, '3635937a5a6bbdd192be636fb851795d56b178f467b6fb7ff6476c6f05a41855'),
-      (162, 3, '57e4ba8839273584ffe3277eefe7a7f6317a91d6cb20164c7aaf0c6f06ed91bc'),
-      (163, 3, '5dd7411366f604a7e1b1cf464f6080813ae1fe0049060c82086f1bdf8461d064'),
-      (164, 3, '0062414e15504a1d7d0363d3ad1039647dbc1713ca43396385d06cf5508d627c'),
-      (165, 3, '28736e6b4512b2dd5ef1b5264c2b56bb841fdc8e45e957eed9909a175141f4c4'),
-      (166, 3, '86162e70d6e2ba3fcbca3b08dbbd9b3674ff2d2e36d9bf9607ce5217d1e97981'),
-      (167, 3, 'b923fe31d14c91a80c65e865b14b3d037c66f9732225c40152aa63cc8ef5a437'),
-      (168, 3, '868003a283670e5f6504e188eae2f54fd9f5dcd6fe2da96d9734f80c03f6509d'),
-      (169, 3, '1f756119c42204921d89e6d40e4a9b551ae0c971555dda5c96ef1b7b04295cbe'),
-      (170, 3, 'c8ed86ff04015204293765c4744b9d995161fe4f4639939b6011215f74211aa8'),
-      (171, 3, 'a2f005b0c0e84978bb8cbdedccb203c266eb7656d417ece52f38fe379c810971'),
-      (172, 3, '10a1d8e8eab1e368dc95632c5e5fd37c2183f4ee9e07b2b0b789d173cc81d70f'),
-      (173, 3, 'dc4b626c0bdd5d38e08e41a98356e490d228c696c29e1ed6821b6deabfde7722'),
-      (174, 3, '082b44383ca4db09f6e8e5be03b56ac59e49cade94a48e7de3830b162791dd72'),
-      (175, 3, '8c2bb54fcb02c72ad0635f0150a55062cd3fc02ea1d65bc67a510a95a3933292'),
-      (176, 3, 'b2f721014c922def4aa766e77ce1cb53eca821d262e987cda89428ad83c197b6'),
-      (177, 3, '96d879b23fcdded4850009f3ddfb43acc3eaccfd1d9f60548526d8e06d67ad4f'),
-      (178, 3, '700782f57d386ac1e85be11521e0c766ce230d6cd7527adb7957d29f9eba9e49'),
-      (179, 3, '33fc7344ac5e0e1ce73c66b35a11e9a132e01f7fe653ddda9cf12682c32274e9'),
-      (180, 3, '2528090f6087db99783ca5fdb53363d7c6496df93b4da345ad37067a2dd51301'),
-      (181, 3, '9d3fa643932adbc46454a9aaa8b8c88575de4ecb0c0e3dab42e85742cb3bee20'),
-      (182, 3, '36bf8cd66f76f94f5276511b394c4dec8678ae5748e7d41845903351b9db3131'),
-      (183, 3, '0edf16682debaa24657ec5a476b751078f2344774ec6135a2359f8d62f7240fa'),
-      (184, 3, 'c590bf7b955475485fd1a39b2021af09509d19d27432566f02ae68d569f6a478'),
-      (185, 3, '60c2fd4af3e55a44a9e17c9b8f4c244188f846054d59f67a2905639832445f8a'),
-      (186, 3, '8d56c753b48b2f09afce65f01b3653d24a3b20d0a8228f11e8a051d781a48ebc'),
-      (187, 3, '5829c00ecf9f65ab26c2051bd636f1611c7e99996ed2e90bd5c71905089a488f'),
-      (188, 3, '7e1b9c5030517b7d5fbb63636340256b2e3417c46186e7e4f02bf24d31b716c1'),
-      (189, 3, 'b111e06bdbbdf46b212f86c195030f9b8cbccb6eb7a4e016d0326fee4e12e989'),
-      (190, 3, 'b13a0975e4e2f8b20593e20134c6e598dd316d630f5600470ead0400e6c95bfe'),
-      (191, 3, 'c55b68d259ff23d74144f115faefc1967ae94fa573d61f56fadf0d9bf465a11a'),
-      (192, 3, 'e82b7a7044be3b61fb3e16c30ab77af3ddc50ca3729fecc5c90c1fd943f93535'),
-      (193, 3, '024671bf999280065cfc1ef4838710452fed2317ce13d68d0eda495953d03349'),
-      (194, 3, '5515a5977ab1203b4fc1571626ea76fdb2463b2d32c245030e348b045c57c923'),
-      (195, 3, '4c61a587395a044812826997fee0a73616e2219eb1793a6ab01d75e520d9a9e8'),
-      (196, 3, '88d49b86960552e2db044da48d960de20bab5d3a3bf58168d86be68d113717dc'),
-      (197, 3, 'ab6b3ff73b14ebad8ff1613b6cd84952731e58f6cde88da8e1f5e1274b1aca01'),
-      (198, 3, '0528dce858f1cb6bd97a48a8a2a00bb80b396ecd193209383ed37748a12b4f7a'),
-      (199, 3, 'bef74b77d658ef22329d29d301caf23e71362fefa2e90a99bc44577b3bedb646'),
-      (200, 3, '5df2b308c358361720430186c8ffe4eed5ae6beed4741d1882b5a21b4b23a2c4'),
-      (201, 3, 'd74405d15fbb8b9a8643792a477b789a136c2325a46e1702e3e0a508ed8cf64e'),
-      (202, 3, 'ed9032c172341424419e2ed1af7f666b7941aa51d7925e046ad0dddd3791fd00'),
-      (203, 3, 'b6a862fc80a50d24e306b75a4cf61daa8419b18b9ee3f9c76acad9add498962d'),
-      (204, 3, 'c546d74ec75d4f3f478d42c93bd0148a31202c97f12bf96323b9c8a2f70b839e'),
-      (205, 3, '71bce0ac882a170aa91380d4b6becd871b0d1758509f514313ed85c018207fc1'),
-      (206, 3, '428ce17412094aa820aa3702874ab081669357d0d45defa5f170ebd07b302347'),
-      (207, 3, '781456b14fd92fb23183f4df13d2dd39c4793fe50c8259e8ab5ec4c6cc325155'),
-      (208, 3, 'dc9f74a1fe677a35d9d75b23ffdc4cf172a32bfd8588c43932a56d21fa0e026b'),
-      (209, 3, 'df848739d4f845befd3da3cf2c2808dc9425c25b2f55b199919552177ca8078f'),
-      (210, 3, '80fb427d51584ca9ced2e9a270286e685261a114bde5c4c277a5677274b10295'),
-      (211, 3, '8bec7a2ee1b142a80242e675cc90feb06647b937d47f18f42f70cfa3dd2cbaf0'),
-      (212, 3, 'bd84a55543efb81adf186fdd557dc67f5cf0f7c56b01a4d08d4264f63cab2102'),
-      (213, 3, 'd0197ab4f658481912c61231bf1aab3d140f41b399fcd0de853406faec8dabdc'),
-      (214, 3, 'e9302be7766edc5f0ca0f55468a0aa18ea89bc942c9a20401dc163ab385a7438'),
-      (215, 3, 'fb5a7260f1c3beb25c04bfdacb94da5bdf142fc4c0915e01ebc71f25b430a9d3'),
-      (216, 3, 'd9b64dc2b24612fa51ab27a32dde6051d0c4b915fdbd38a568993e1571e34f6d'),
-      (217, 3, '46f1f18688242e040ac700d0e08f9826203f8461c2c52c186464e1c74035ae3a'),
-      (218, 3, '552b03a9b53b662b565459c92edf79d2e1ffbd385664eaf0c0a0e61f57fb551d'),
-      (219, 3, 'b75d12ecc7e9f202c49c1c2901ae21b3cdc7c4e0face8d03e480ee36ba210fb4'),
-      (220, 3, '63f8e7f61794ba641b177275b17f0c6b7c5444a6a6b4f4d6c8c66cb4dfb3c3c2'),
-      (221, 3, '9c47c13ed886bf4e335a5efeff3629ffe9462a06d09229514a09ff100ced15c8'),
-      (222, 3, '77454bc62daa6796ab627fd8aa82841a478c28636ead39634573559300454588'),
-      (223, 3, 'e7470669d18ee53a84ad39c6c65b6f33ed3a00ccabba9f49dad99b7e03a9e791'),
-      (224, 3, '0e0043b9ff2dd02ad35ffec2d736b811b268eafd96c321a4f58a11fb5644e9f2'),
-      (225, 3, '8df00848c89981c648f8f476fb10a0359f5c5753eb81fadc44d136e7566b6b3a'),
-      (226, 3, 'a46e68bd904a8d92b8609b4b7c5313fa557ff94a644a4ba98a93cf8caf725df4'),
-      (227, 3, 'fc8d638511d25d5f2aff1c68f70d5c24775ba015b3bd387593e1c7af53cddc08'),
-      (228, 3, 'db72f291c94c4c6c52c2e82190905c1dc37b718c0fd4ed450adeecac601e7308'),
-      (229, 3, '41e476a62449fb4dea386310c84b6544c98caa3f98ee792dd3490f89cb3f915d'),
-      (230, 3, '69c5d39419bf697cd9c1d57fce421e9a0ed8e560cb705bb2a9454173b1fb72fb'),
-      (231, 3, '278b5200345f4f3b4fb1bcd91c9e75e11ee494cb3726483aa9ee9e59d69cf74d'),
-      (232, 3, '578f68f27409c93bcb9878e170818117fc06b5e5547135a9637b0ea6b5f6e6f6'),
-      (233, 3, 'db9164e112cf911a304f4bfce0df99d0f566ee01c6eb511330e8df4781de3e47'),
-      (234, 3, 'f1a7ac971ddd3f565ce35ddf6925c777119eaa91e726e692133987cb9f2e6e20'),
-      (235, 3, 'c12381fa067d018e9da4be6a1dfe415d4dfd51157f3cf6bc2142ab8c18efbc6b'),
-      (236, 3, 'c1486e22dcfcafb42e5591f0da944c4e27a9d2967ddc89af031ff35dd7333c87'),
-      (237, 3, 'ae030e800a470a15bf3154af52386f77df4a4d17c85b760e49eedd84be71001e'),
-      (238, 3, '0206fe8aca27e358b290b1d47cbf6e8c4a2c8d86472a5343801fa4c322dbcf8f'),
-      (239, 3, '34501a142ce2c612a27a9c0d5901ce7b879875c5d38ee1e8d8f82d03e22533ec'),
-      (240, 3, 'f0b587471116ceb36b337095d5291ad525fbc6609a2de009ffb57016f683fd1e'),
-      (241, 3, '2ebe4e9cbcba8a8911e6ce6b1a5ac5ec9c29398381d4e87d05ded2419e684e07'),
-      (242, 3, '457a942429d3fd1743bb47d9fb9b3463ffeba1f27cd5ab0c5c069feaf72aa6d2'),
-      (243, 3, 'ae0db8418f7f6c7d8c931bf611bf3cbe8b9f55ba6d7c00115cd14abfb11365b1'),
-      (244, 3, '7e5e3ee5b93958d1006943f0b3c316ae463b09d96c4f869fba5f7ff9fa9d972d'),
-      (245, 3, 'aa32fd6b4f437695eb5d0f53b613d456d51a84146aa9540202c2efec41a08e17'),
-      (246, 3, '5ab584ceb62423fb58e3674cfd378848646bd23312b1bbf8249a587f6d7428f8'),
-      (247, 3, '4080d15977f7164c2bb0f6d51239001280ffea8c0145c4f33d1fec847f62c7c9'),
-      (248, 3, '98249191aaa5aa7d744a64acc65c30c2647c5971c905806b5c98ef20edbce5f3'),
-      (249, 3, '17d40f44c1f518d315ec081568a4780a89bc11bdc826983f2bc4a5e9ed619df4'),
-      (250, 3, '08dd9c3a1f803ff724f3b6ebe529552135fa4e73d72c53850a5a500bea0bcb87'),
-      (251, 3, 'ffc3c9df0ffe025f5f0c20fcef3af5b09c5709e7d53b9c95882af4b1ea6878b9'),
-      (252, 3, 'c7cc23dc19365a7f10f6f6bb34f504a5f26b48f25bc0f163767c414952e118c6'),
-      (253, 3, '8286fd70ed23194c48cff2d1c91fba777c0568312be699d7b950b6c7ede7a51d'),
-      (254, 3, 'a512249b6803ecc8defac96f380ff81b045025b753f3800c2f4a93982068e685'),
-      (255, 3, '27a57ba9c143be3c46739e634ab2cab272934a48a007d8254c241fc274e1df24'),
-      (256, 3, '97502fdd97d264b2a85d8ea746f193169c1dadc29f686ccc7032b8b7b0e5c136'),
-      (257, 3, '6baa958a21e4aa9a9d741e0f0cf45aed1025a9f3b9c5fca9f49a2547a87ad2c7'),
-      (258, 3, '90ede64c8b18438d12941546817afdd2ad417e4ab80032ac528754722d68db86'),
-      (259, 3, 'b1e83b4b7e3ac0750c4251ae4dfbd63d91d3d2d6af25bab5f26158043a5d8930'),
-      (260, 3, 'a15cfb2d3ed36ffc2d3678fb3a774525cb3029865ab6d7c3fdca8934d2bb9f85'),
-      (261, 3, '7c48cbc08c8c84c2c17f1a8d76885a1a85b711689f8d7f666ed70f80cb2f9dd4'),
-      (262, 3, '3856c9f33ee5ff7703b3fe7045aca5272aea6d9b584eb90ecc9f8fcf3d78a00d'),
-      (263, 3, '4ec42196bfdbbb5fedaa27887008662ea162d839492d7af0be8d7eed452b5908'),
-      (264, 3, '5c495646e7ac688896cb3603b8d8737aaef01b80c6336d0d7b099e8a0f6792db'),
-      (265, 3, '5b5a418d25b10a748227e5c3b1fb20310953d8ffe56d7cfd5224f9bfcc986c46'),
-      (266, 3, 'ef193dc6e6739662a6f26fc16d4dbb66b741d5e49b8ddc75bf0a3bd52f693e7e'),
-      (267, 3, 'fc064aacdb9a738bea022da673a404784ff0db64eb02856500db16ba8b2cc760'),
-      (268, 3, '444688106f6a91202dfe92c543551fbba3407c75a7007ee56599e3b228a481d7'),
-      (269, 3, 'ad54d46472c81da2d469fb6da2e4eb187ce5af24149e251c4489fd6c6a4a70d3'),
-      (270, 3, 'ceb08ae31496bf2bb2bbe3c9afda3dfa0ce3c7466cdef0af8a6a383853625402'),
-      (271, 3, '626b899b0cff3488ca3a283e873dfb4876a53a21d7f043024e9dd7e1c8ca4d99'),
-      (272, 3, '743a732d49dfc63d9291cfa0d4f0593156c9c77f890b3bad582a8fb659d049b1'),
-      (273, 3, '8937a7047bc1239479e4572a722df3e479137a4d658535a701c4f5c077c11569'),
-      (274, 3, 'db4c818f1b2613e8ad9fd79b059c4e4f44642387db99891f7826021e99d6554d'),
-      (275, 3, 'cad3fb683c40ae20688086836b354f6d43f7d0b1b82d55dba9ca61f8151dd12e'),
-      (276, 3, '34aa32f1cdfa82378e5a1d798afcebe497b7b6d45434f07678e2d7c5541b9700'),
-      (277, 3, '76c37455cce816895ac79cfe2facc38bf728bcba015f85c20c6b23fe5727442e'),
-      (278, 3, '9f424f68184b686d036f22a61a544e20b5ce6eb67304eb555058fbb7e22102ae'),
-      (279, 3, 'a37e0b2f676d71279c3499aeecc7c620fa448b202eb039f60b8b5dfc35ab80da'),
-      (280, 3, '2450a6e78a2ec1d29fe8250973ca23948278925e7cf38dea8cef0f4197b34edb'),
-      (281, 3, 'eced86dab5381ffcf9c85e92a2dbaba26d3eb505635d629616f1093186e872c5'),
-      (282, 3, '52669cd4d354ddc025781ea0e5e341a5f4700e2776c858aa7f54a32edce26ee5'),
-      (283, 3, '499d97d061bd7f0da7cdc3695e48a4cee7ed7a2e62ac87dbb1a1fbb0fb91ed8b'),
-      (284, 3, '78318aaff01c66561f40202fa5760e34ae719aa81a7d05380e4ec057b83e3f92'),
-      (285, 3, 'd80738d98276b87b4bfb03fd406b838fa88198fd803f4022a332978f6b3325cb'),
-      (286, 3, '74783f8e25e73fe1b8faa4d679d0db9f1cad363a47a83b83e0f6b0c37806c677'),
-      (287, 3, '910a9b4696393359241cdae239a1b04476331b7a1d2dfa94f3ffe50072cb791f'),
-      (288, 3, '3d69aed435630a8e60e128c1da621cff6f706c39726ffcdf8cf59d2b34a50546'),
-      (289, 3, 'c30e6c2e7b2581fb5eeae7c3b5bc7a75607238ba4dbc335235b0e82d0ca219ef'),
-      (290, 3, 'b6f9a1fd13391dd95e94eee34f34f964767521bd548a2aa4685bc20da8077ad9'),
-      (291, 3, '2e76cf2ae2dd53cb2320f10bbf42ee62c59aeb1e59770aa87538c829c0b259b2'),
-      (292, 3, 'f8199e6854662e4c982763c29e3ce9ea96193f929cd7d4a15378a9040809cc15'),
-      (293, 3, '96190f9eaf18bf30cf3d37fcecda7cb3205aaeaeb7e7589a8c874807cfde2e71'),
-      (294, 3, 'ecc093b5c74cee9db773505437fa70e9609bb931d11ea981da803842f608fb21'),
-      (295, 3, 'd684e7c3e9003bfff0c0a120797cc96df6d46ac43f402c1ad4feff2d8cc4c56e'),
-      (296, 3, '793698c805e1e44061935adc9587a3e3968b5b9f0b4dc85d15a4b8dd4b3f54b3'),
-      (297, 3, '42657b5248681fea9ca0ef7d0c40763eee545924d64fbb1379939db20e345735'),
-      (298, 3, 'd3a7e84be7fed1d723c58a94df35dc911cfc03b00811cc947d1ece974fa021c5'),
-      (299, 3, '6acc1edf92a52bcb0dd5465616d3f7692da8c74e3a23aec2d4e3eece652018db'),
-      (300, 3, '8f874415a3b1ac24e2d79dd667aa67bd90c1203597a6ba0c272b6be143fc0d86'),
-      (301, 3, '0aef57f54ff51a414402b4f97ca247f366927b7f18149a22ea47a9527c623444'),
-      (302, 3, '227cb6924890583a81b48fe96f19d4429532b9d9511bbc804a09c91deccae2ca'),
-      (303, 3, '8f520f5793b327f4e4c7d32d94d3dfcbe263744558ddab25c84ad83b977d3bbd'),
-      (304, 3, '75b719cbc8b3026a98cbfdc7f43b364e469615c34eb7775ab10cd5c24bc1e8a6'),
-      (305, 3, '35a82adcb4e276357d0177205557ec37d65efae6d8837edbdccdecdf8a11da04'),
-      (306, 3, '93065a693c3ac03bf76e9adba3c1c83ece61551ddf01941554065fa0421e386a'),
-      (307, 3, '4cbf405bf98dd6d4b313549e36b30a9722b28c68cbc94a5eed11721b7ee1cfac'),
-      (308, 3, 'ff28d8d57dbfc52c460275c007be471c7c7c3b72441c8b612973ebc4fb7923ce'),
-      (309, 3, 'cd14dca253456f6310cf6ad39a3a45e3e4b3e311efb61021a8c1dac1135ffdff'),
-      (310, 3, '07444271ded80b3ad78956afd6ef698a4b4671cdde55dda22cd9a25d3ff8eaa3'),
-      (311, 3, 'd109b48c51429e4a9c973e80ba4396902b3255c5dd79c7f80e8dd82da3e34352'),
-      (312, 3, 'f090b9302819e7495275e54ab4eae59fa4ce1e1531e9f5f9071274628171031a'),
-      (313, 3, '94a24e12f9555e5e510dc6449fc95e499ccd4354363e2a4f2d8f9b798a226dc3'),
-      (314, 3, '400281d4fd7c5242e46d31ee3366e92f4d5900ddb78254130ff17e634563ab17'),
-      (315, 3, '8d896f8d97b03871d1cda5555b30b0b2154f7dbdf13aba568f53286299ee9430'),
-      (316, 3, 'c244416d1bd521aa8691c22b25623f58c7acbc4a3b50ee66c20b86590435dfc6'),
-      (317, 3, 'a22948544494e5b406816f3b188f81355791168fb6add3a94f26beceded1da99'),
-      (318, 3, '89308394dca947bc8eab9f1fad6b1fc180ce63871b0bbfbcf890a7ea35ac44b1'),
-      (319, 3, 'accc5a3becd19eb7400d5817ab8c988730aed39f9914d74c495af448af81fc28'),
-      (320, 3, 'bfae3c7c2694f4159eec934f029f87b4698738515faf633aa6c193653ccb5625'),
-      (321, 3, '5f9495644e0cfcd99d185e1c17e408f6991292b0c7823f8305bcac4420e17228'),
-      (322, 3, 'a5ca0ad80888e95148cf2bc3f0879a1ad2b64fb4a24f226285ec742a82128cb5'),
-      (323, 3, 'f8067715c557e39ba6413c1c3d03e84d061d305806b591988c69342c17f4767d'),
-      (324, 3, '566ef6be65d991f15c8b4e02241df27ca7fae65446ee5d6d57584084cb370ff5'),
-      (325, 3, 'bbfc96695a6af287f97440ef911c223963fd222cf56aa6b6fd522f7365132177'),
-      (326, 3, 'ed711ec7342da1c1125f236d18f4d96022e1f23fc4edaafefd529ad3bd0a058c'),
-      (327, 3, '1e4a246e4bb4a4f31b24eda81fba4dcd7269cee11d6e0098fd45329cb4502d41'),
-      (328, 3, '831a526e631cf54997ecc08fa5ccadf53ee8b2584f65388d3cc4921dfda7cd85'),
-      (329, 3, '0834c1026055ea6c9e1768ba636a8cdbf7f2b9ac5e6b4adea4308d6e6f461b9f'),
-      (330, 3, '3c9705b618be9bf4ab5482636ff8d5683b26ca40ee8f7963838968a86f9337ab'),
-      (331, 3, '14b957d116b435d8edeafa4ff585c3589580a351f4a17cd9f9847488e48392ef'),
-      (332, 3, '7d0d24077a8aa548b63f06e6608a15700aa768056844a759c387e098558bbb05'),
-      (333, 3, '945637d852a1070336f2bce0d051a07c818bcbfd24bc4a32c9ba737575ce915f'),
-      (334, 3, 'e9a5b225a48aee7eb38b6601048b0afdd924d9d76527176c99dced50d8b366d2'),
-      (335, 3, '283726d0743893a6236db47b17cfca2a25b0e042bc3a6dc759d9d3dceede1bfe'),
-      (336, 3, '0df7a906b6c0b1ee14366d9388ebbb4633ee2effa16dadb6091a5cdb9839e787'),
-      (337, 3, 'f50071eeb2aec3d68adb05d136bce0c0cadd1184a58404b8f164a331dbd3a72c'),
-      (338, 3, 'ee86c19b0002c7b03d8e4aa595490c9afe684c56c790c6c8f6d950b9b90beeca'),
-      (339, 3, 'fd466e37c04b55f9730ce0838414d4914ebae9f97d65de588596f255dd8e8b8c'),
-      (340, 3, 'dfde2b95524d3f683cc99a04617c1893f3f0a25f5d0e6e80f5a5b47840165881'),
-      (341, 3, 'e54b7580a263eb4638b060621694d22083eafc692edec240f98db2c7d3ac081a'),
-      (342, 3, '6935be7e054481749122e559e850aa4dc6edc5f5fbc298abfc1839142576af18'),
-      (343, 3, '371e3cbe27be48b41ac7d81d184c0aa9c992bfd3618b27a88368920f3c5538ef'),
-      (344, 3, 'c1edeee61a05150792e34bc2aa1d4b879bc8044f047d5795d573424e8c345273'),
-      (345, 3, 'd5811fb8c2bce7303114daa5ca812c025526d965ed8b2f0480d77ab885e8bf34'),
-      (346, 3, '65e65aa35d40e153d84a1041dadb9f8c1dab80fea8d51e45e83c42085d0d251a'),
-      (347, 3, '9545feae1823d239b6af238e9a946c388c4a7ec2005d0cf49e0982c8cdf202d7'),
-      (348, 3, '6668259b3dc1d0f85af78eae60647425bd7ff7e6650fcffd98290f9abecdd116'),
-      (349, 3, 'a6acdb424da6f4db16ddebca84e8ee1cbd90982bdda129c17787988a489b38eb'),
-      (350, 3, '9ec20a856892e9e53f7cce76d29f34e517dc7a0a42798146ccd1bb555479b400'),
-      (351, 3, 'f1c1084744df7eb441736b7a078d292a0d632095d8b0520008e73bde058ac5f0'),
-      (352, 3, '5f4bd02bebbd4a4e7cda5883ec9da8fddbc74ada566a38c145a47392a5d8c383'),
-      (353, 3, '7cc5d38e31faf49b4e51d3a69fbc5161dafa57ad42ace45cc8c6d03a2365bd55'),
-      (354, 3, 'cf97baceb2e5ee3d5e20f6f005444e1eb937f1394f4142a145ba00ca2af66569'),
-      (355, 3, '3d8484d0416a967d15eac8f618c74123137ac377f1cfe60b1b19f2b921bbffe8'),
-      (356, 3, '122d0ecd0b50e7f2f3f795741f07cbfcbb2708fa2eed820d6353534f06f3c0c7'),
-      (357, 3, '92c69dafe9b28cedf8fa802012500ce2cc3970b226dcb3a670f07c6a9a74deda'),
-      (358, 3, '72b3c64e0f507a0d27c0b585e568ffb7f3aaad3fb3e70dc471ee1574fd6e1fba'),
-      (359, 3, '7f05702c1ea28f1a9dca61d709a13638567332275a35a0dad54e2c703685bbec'),
-      (360, 3, '50174af2682c65d0be78df5445ede64d6996274a4a31f70ed1c3c8fb83f1f38a'),
-      (361, 3, '2342e16da781005b8e9323e87f4a0100636a109a1e448abc857377dc59216ee9'),
-      (362, 3, '263d81ee49967d00302a952fd52d8caf8b15a54955679a7869abcccfb3a55dca'),
-      (363, 3, 'e32d423ced5830ce794cbda2196939349a2c18abce8c25cb8518dcc43c375ffa'),
-      (364, 3, '58f03abfeb7ca669ce4c0c38bee37b2fce831fcc7c37841ef356ec29741f991b'),
-      (365, 3, 'a0ebd74e0d765867693169b996c8457e227a7ebc49637aec2561d27135408a36'),
-      (366, 3, '9ac9bca069f4c7bdcec4f4988c8c200c99ff4146e3a540814ffaf704e501ff19'),
-      (367, 3, '13438fd1d68a621defe02dd4a6e72a274e3b337c51952d7c6c80991684473338'),
-      (368, 3, 'c1445ed743ecb5de74d8b57782679ff676bf03ff831fb5afc696c47f73e24afa'),
-      (369, 3, 'd19bfc9f25b4e85ecfaa3f1352a1a39357f4678e80911a93acf24b40e0954657'),
-      (370, 3, '48ac809969c4f3ae63d5a314faee67474418bfd2524b1a644dcf94e5238f4c17'),
-      (371, 3, '75495bb3e08f17f4cd696ed593f13656345c5e10e31f4eaaf50d14ae06d103dc'),
-      (372, 3, '82adfc06872bf931c838f87fc16fab3fcfe290ed75832c1536d82346706c6b85'),
-      (373, 3, 'b2c60548698d2399518a51a2f29a113d0ef029c3b7d9eebea54a35faccdf8ceb'),
-      (374, 3, '286eac93c0b057602637362116264a58002223c2dbeaec108780df2af2e9e602'),
-      (375, 3, '12fd7cb3440f5218c88ceec6276347b5b8440d9d82a41e80b71cdfcd97807cd5'),
-      (376, 3, 'ee8c4a2cf06cc0ffece2ef7fe55c4cc74622d25d8ad01e2922a8f8aacd8b6895'),
-      (377, 3, '764ea298fb9974dea60baf9cce1d8446176c91d9d849045caa4034ac7be1113c'),
-      (378, 3, 'b4468be2a6415833c7cf685f617d94bf8d95ae18f1d85aab72e9ec1561353ef2'),
-      (379, 3, '347dfff8b157b0e4b71d1313e5002fb8ce54594bdb53eed45fb27666118c7998'),
-      (380, 3, 'bd07026c9d469351712950eb3ce95e9d30aa929f2fe10169ede93b2a7549f5ac'),
-      (381, 3, 'bd62118a9073e205f292f70297ad7081bc0c6f91ccb3a6b6678e4306d236b7f0'),
-      (382, 3, '0416d10ae22a9984fbfee558137d3c11ade1287c381c68db70af38211fd1599d'),
-      (383, 3, 'aabed978285228977668259623776b45a54e06783ffa039fee81b602387f9727'),
-      (384, 3, '298c645adccabb8ca109e907085843a36457ed83b620673e477c30eee89df4cf'),
-      (385, 3, '24f6cf3a24ec5ab6a3a56a015b261791ee9bc710b7e22467500ac8875a9f10b3'),
-      (386, 3, 'd42291e70d23bc53b492ef8699f5ec71d358f343ffa3c0baf99916ac095279d1'),
-      (387, 3, 'b83935707a9d7d18bde6951ad8972371494cc01ff5b3d1adafbe6351df930cd0'),
-      (388, 3, 'fd66da4b0b95fa8aab2e684027337eda01d2357ebb1549947c4dd40725aad5f5'),
-      (389, 3, 'e018f9a975ae89431beeda8d0c0af25d31f336f5b97d52e92d1bea9cfd870340'),
-      (390, 3, 'b5d1ad60a3ba42be5771bbdb89b617b31b2c3d5b2cabe5572fe575a5c01d166b'),
-      (391, 3, '85d4f443b1bd7925386157c76c8fdcb46082efdbb04fbd7a6e8d8ad50c4b49c8'),
-      (392, 3, 'c0b969d65d0830967b6956c17e695f2cabe1cd1b23f118b55f36538322689619'),
-      (393, 3, '53f7a9093956ab49fcb003501776b087e055862ac38b8bd12d04d5ee50785f54'),
-      (394, 3, 'a557effa458f8da18806e432cbe53b91a17a84b43eea9e44aaba0f523813ac23'),
-      (395, 3, '23185dd940547c4be78c06c82518ad97156d2b5eccaf357f6962f5cd81ba3ce8'),
-      (396, 3, '2c17415d3d2e704661e966bd80db4322f0fe4871b2292f443d22020f410c2c74'),
-      (397, 3, 'ec602a8ea9ac35fb6a13d9f55c95456d22064b3e10d1c51ab6e1c1ca37f1bc39'),
-      (398, 3, 'f73774badb903ff5328f39fabc3021ad3268aa33cf77d488e0738e0a2ed8d7c7'),
-      (399, 3, '28f80f695efa84d33bf82d69af04ae87ccf95416109d418c71fefa95e3da9838'),
-      (400, 3, 'f269d9186b3138f6f2ae034fcfdf4a4faaa99cf33c495b8e144c3c1ca427cea1'),
-      (401, 3, '2e11d8c37d592d7d7923d0318974f623ff43bbf7490cef1258980f7b85b8f9bc'),
-      (402, 3, '8ef6a4c9b53ba2c372122b37b87d648613c4073baab68c37df1e8b25b85ac9f3'),
-      (403, 3, 'bd9ab22a31f11dd344e7d1afe7b4c3188a7a92e60dd9d01fe715d45a63ffc14d'),
-      (404, 3, '020b46f0ccace0ec99cced93dc6d95815992dc736600a276b032554cc96f9e3e'),
-      (405, 3, '85cc11f156c66bc872e8f4d1f7ee17825207093d1daf2323250ae47790627ad3'),
-      (406, 3, 'b0ab5165f1ca34507e222f1a9ff4df38c53c705e572da8835c258846a5a76e4f'),
-      (407, 3, '34e30cfebc7814cd86bf411d770f7ffa0ff619dc51f54440f5df448c421e4356'),
-      (408, 3, 'f45123d786afc73edfb5a6af2e88cf3d28c0baecef5bc2390229f01a042fafab'),
-      (409, 3, 'd105a77a05e5d5eb093f439836a093c528c6094cd4471e64d225f57eee575ac7'),
-      (410, 3, '1bb185dba7b4986abaf6fdc25281ae1077c9e3f2db2e2075919f5db6043b6b42'),
-      (411, 3, 'd5bbfb524a8f78f02b504d11aea4fe1c81ecb3a3ba9a301f1ae78b649c4e4968'),
-      (412, 3, '272e1829885c577aa734724f252867e3d4285a3e389e34e9d47f03a4a7b45c58'),
-      (413, 3, '455c6448724910871085851c08a14ad42a247f32421dcddeaaa1bdc1b7732172'),
-      (414, 3, '8fcf113e67ee9f42209dcc854d64fff03d2c5e85f756ae30434217c69818e0f9'),
-      (415, 3, '4f6d3f3e07b417d70617d5875eee1b26e3ed5c4949615f44fddf37f8d1c3b34c'),
-      (416, 3, '626dcf994778e726fa106dd1cc74af471948b928629501f104a3e09f5b140084'),
-      (417, 3, '638c0d0110fd2a0d404303978939b94dff430718c320103333178fdd3c661760'),
-      (418, 3, '6d6a494f510f0fee6c88cf73a2e7ab441b5560e2207b31b4ff4b0843dea442e7'),
-      (419, 3, 'c32d2e94031f906ce1cb16ed5619b64d0b70e0b16c69828cdb45a022502c763c'),
-      (420, 3, 'e64ff2fd9bd53712088f660e0488c600789162b057c50f8e524f6b9c93430911'),
-      (421, 3, '14dd6506a8f5bc2fdbeda38f1860f81692cab33d41503edac9c15e5a67c4d7cb'),
-      (422, 3, 'db25a0147c420473f1808272fa88d51b44aaea11bd1cf67df174bba84ee172fd'),
-      (423, 3, 'e0dbde138d293dcb648f061cd6b0118dc63432e64141ff0d9865ba3e1fb93c2c'),
-      (424, 3, '2fedc121fbeb81b8ec5906581a8099d08870c9c8756afb33c4807d0c8d02d2e0'),
-      (425, 3, '5148dfe311e357c023322efc14daf493caeb4a31b4288c37f50c7c5c9f848946'),
-      (426, 3, 'c08fd3a91137c4042ec2fa3a4a0fa014db8b0b562b59ca5581a3d1ae05c9637d'),
-      (427, 3, 'fd76a5d80755024d804f57f0a36b29b2d018f6f603eaec1e2707b0a6042aae2a'),
-      (428, 3, 'c03181c470fb9c62645a84e80aac6c7eeadee39acc5fe7cb3bf1a3272f127b26'),
-      (429, 3, 'faa69e095320518bf89d65d4a6e8889577a20b68bb2994160b2fc0d1c76fdcba'),
-      (430, 3, 'f85f6784ea8d3baf709bcd3f2e99565ef7a667ddc9b8aaeae27cbb1fb9ba5283'),
-      (431, 3, '13c0f4650301225715c89c0d47dd967f971a93dfbbd8fec0af8ec1d254b4bd54'),
-      (432, 3, 'b84d5eb5cdebc51443554ba08ba3edb16428d4f5a26a40e0d2a83b7ac8d3b95f'),
-      (433, 3, '02698f6e6062d16cc0360ef60c45350ad4e81326ae1249d5a881e2b4f195564a'),
-      (434, 3, 'b8a85a6fc6979da11286eb8cbe7235efbfcae6ecae4237aa055a81e9bdc84a3b'),
-      (435, 3, '9fc135a960ad94971f606674c324d8110c86dd8ebae854323c082ed719756447'),
-      (436, 3, '704491e3c7698499a2dea984576b661f894add05ffbf097d66032e89731b1d10'),
-      (437, 3, '93f7eaf20508df00697a95b583351fa6be05d471ac6c55ba5669f2bdb1f21206'),
-      (438, 3, '447a541e634ed65f76fa32ae47f8519006c18ddc658da165861fa956d211b231'),
-      (439, 3, 'd84114a824d06aacef0a96d9a379993f801c2343170a27fcba0bc8df692ba78c'),
-      (440, 3, '52c0b467c7fd34f710cc85b98651b162ebbdb893f6bee2f9a7e59d042216c6a7'),
-      (441, 3, '30e85d5003c36965ebf08ab20e3383bd485c47a992a8a1443cd8b767d000a639'),
-      (442, 3, '8d67f507dfd74e42cf14a15aade3799975f6b7b291fcd1507f37e74a78fd1120'),
-      (443, 3, '9780ec5c024c86dfc142e0b4c482cbe700b0b11617d7ee2a735c7fd45a23ed2d'),
-      (444, 3, 'afb334b348090e1b0aca137440861e0e11e6f01450e098da2222800003e61612'),
-      (445, 3, '377ff155c66880044841116ec313f30cd491d413c45174e12ca2df6bef40da02'),
-      (446, 3, '22b25ad19e5fa87bc943a598acd5e013b5dc68a8aff96f3af0ae173b05246ed7'),
-      (447, 3, '7c087df4594cf29bebd89e7123e20233cf6810509c3d9318fa971663f8cc7dbb'),
-      (448, 3, '8ff8b2396fa3d457ae8a1065000ebf694468cf5edcae906864ce248414715e7b'),
-      (449, 3, '3c502f7640a05db4e88d7d0fb3bf828504eaa3e2d51fb8a89aaf939b724ca5ab'),
-      (450, 3, '2b3199e8bffce8e16d7ed102c9cad630c5a89ed981ed0a0952c0943832a7d4df'),
-      (451, 3, 'f7ff2ac7b21d2c1af3816f3f3089c620f415e3961fe6dff31409ae910cae130f'),
-      (452, 3, '66851c994d39ac3ac75b45d02bb0c7da9edafcd00f61dc4bb11098fe37674e57'),
-      (453, 3, 'd5572e5cfe710fbc38c0fce2277639950b4d98bf186caa8031306cb6f57987ac'),
-      (454, 3, '2d8999f80f11658afe1a747833305a30e15bf8b7f1d2dfba2796f52f1acc5887'),
-      (455, 3, 'bee6f4712747bdf5184a9a3bec935f1d552a39f3afb85d4e78444073b8ed2865'),
-      (456, 3, 'd31da3c5a634d290cf41913fb0f6596a499ba8043f0fdbffa939166d633b117b'),
-      (457, 3, 'e0baf6d57624caaa4bc4fb971d4763393e2da38d6759fa7625c1ee7411f066fb'),
-      (458, 3, '14f697cf42e753cdfe313990bcbd2c369aeb4fe48fc8d65a7a08300819defb78'),
-      (459, 3, 'f4afdbd0da291cb66f5fd859bbbe57382505a045f614719c7f6057b42523e8b9'),
-      (460, 3, '34c7a41dcaeaf977aaab6ca211471163079ef155474aebe7b204eec72ac0aed2'),
-      (461, 3, '81ff109c2e7f8f95e945f57e9b61ed8762295e2df3ee9c02e5d1279608fbf652'),
-      (462, 3, '5407dd18927e57948d5cbd917880cc9676e85333444dc015c381a787fd56db76'),
-      (463, 3, 'b3ac5866327bb106fc711e3c9062e7455eee44d247375f4b7f71bf8aea081dc1'),
-      (464, 3, '87a0a94bdf63d23a2549e5cac1d8b40bb75de1ae771a44a8746e71967082d70e'),
-      (465, 3, '1c0614c66be3d03cff777bdd44601683dfeaa462f7f5968ed908ed6f24785eaa'),
-      (466, 3, '2822a2781da6723a4579d47bb6b64f6b617b80249e9e2ee33c0aa24705b13fd9'),
-      (467, 3, '6a829d7eaf085ab3a469ef998dc868005a8b6ab854ca8ee7a3b413973e845a4d'),
-      (468, 3, '01b61da67b2c68ff6e1e982b1c726ee1b5590bf56247f0b4801e41cbddfc7836'),
-      (469, 3, 'de697dfcc2f16042197c29e9c76ac55ca56c5b2602e051e66bf3189ba4b3adb1'),
-      (470, 3, 'c94006808eaa81e59708733a2b9947f2719a97847ea1b2caaa1f14a246657901'),
-      (471, 3, 'e7c89d3666152843344e9197938a0f37e0f0be0c6b1247a5672dc5480d29d02f'),
-      (472, 3, '260b33116e8a7d6c84f619feef134f0510ef1d0f122c2859aa3bcd60be3c268b'),
-      (473, 3, '01ba9625b5d99f438b9300cec07753df937c8045c947b43eb763627b827d2ed5'),
-      (474, 3, '3c3cf08a31b837d44ce0edeb532ff0e7bcfc4e7291d981bbaf0f82953353e6b9'),
-      (475, 3, 'e7b73588980790cd5c7306345b8ded5d2befa27d7a4b273bc44a675831abb8f3'),
-      (476, 3, '6d423531c2e6042351a258ff18cd16b0dbea670f8d2e69efe9750c544c3cbbb2'),
-      (477, 3, '307e39c37a8e9d160c9c135cc3fe74307336885704ee04e073d2339a3e2cb4f5'),
-      (478, 3, 'a1ce4de6fb095a0e085dbccd245599752fd61ebb79bd218acf3d0c17c80ac18b'),
-      (479, 3, 'e361c95c4f1848eeaf7f69af06dd8cc714d4258984724876e6c0571537822744'),
-      (480, 3, '1d48c36baf399422ffd67c16ac6f52ad38280828a251a4313eecfe89d64e17fc'),
-      (481, 3, '356d10935abcefa49b6574d7f295a05af84f220a8a36e4de97713ead5bb59ef5'),
-      (482, 3, 'dedb1ac84cc1a55383574c89f0e970c12d871b0dc97348703498225523fc998f'),
-      (483, 3, '56435ff9b0124f1da90661b24b7b9b842a8107658b5c2b7277d26d3fbb0888ad'),
-      (484, 3, '0b9086505aa9d0d9345ed4cda2671e0192fa97d435377d43cfd11447f68f15a1'),
-      (485, 3, 'a78ca3b30054249ed945b43ad31a7d202d1f2ec761e0f98697edb1f6802be8f4'),
-      (486, 3, '6f19faba58ffa347270a190ba136ff747ecb8daa7bc284d13efc7e7c6ada3575'),
-      (487, 3, '1f81ae1b5afc68c45aa548fca6ecdb72229c37f7230bc9610b131d1586507284'),
-      (488, 3, '7ff71daa670d5d5790ce550698c40f5d88ae05b5552dff3d5d3c7f403f5634b0'),
-      (489, 3, '28d72c15d08f5e3556e5a298e19eff798cdf1dd0cc23018f1054f8295cf1aeaa'),
-      (490, 3, '60f39d477dc9d153e9467d13d11fe8201e9eb654d889cae2a156458e18a729b8'),
-      (491, 3, '61e2b1a9a073e103a35a16c7d90852a18336fb770f5965f23b77434ddd135fd6'),
-      (492, 3, '697d927284cd1660fe6b8635916a7b0b269a2c127c3e9ff6807b7d4386962b8e'),
-      (493, 3, 'e448c31206a581d8e3ca52732743973b1e3fbfa7b2b4ab909e82408d2e6656d9'),
-      (494, 3, '856790908d0dc39b944748c887d38d403ae33eda5cdf0843b45c05b8247a2d2e'),
-      (495, 3, '2f9766f1aa82b1a0c687083565e0493105645218110df1422119e99be6c76df8'),
-      (496, 3, '2c9858b24f615e5c3034a0395797b620f5a8fc60be7b84e087b60c5600d2358b'),
-      (497, 3, '538f1941d3e6891c3f86e292e089bcb4cbf8c89ac0590f47b6715bcbfbd053c7'),
-      (498, 3, 'c70fdbbea5d129300beba41a567d130667b0d8384d2027091cc3e233b57aa453'),
-      (499, 3, '11e61c3740a8929f29ddfbd6ed50abb5669c75528cd136758a28685b4b8eef0f'),
-    ],
-    149174: [
-      (0, 3, 'caea72b495bc403849df58feecba6ac93f32c2c02d2608cc440777daf74ac73a'),
-      (1, 3, 'b94d21209ca6421faff19847d2c3d81c12692098cb83d4aea6565b19857d5dce'),
-      (2, 3, '7a09aade6082facb176610534a047fbd76de09546fad94c6afe6dab4469d2b4b'),
-      (3, 3, 'd57fbc9143970cf844a3a9f52934f683f500db2a20623bec1af22253ca67b305'),
-      (4, 3, 'e2a5b4b819da9c36cc6581557a3771b85d84be58c2d6155f02469a1ccde7d9e9'),
-      (5, 3, '148619b8f176a3e0b2502007c0ad711edb91487cc59f17d875a22821cec4df27'),
-      (6, 3, '5ac55b699cbfe25628b0a0fde7beaeb80d4e7dde53d7aa709bdf3a1f81bb1eed'),
-      (7, 3, 'e8f4786b122e2680efd7a16b6225b0e1f50f0fd17117be753d75d9841d5b6b03'),
-      (8, 3, '51e487e3c2231a5310de86f8493de5c4f5edf60214fc216036922f6666b8ba19'),
-      (9, 3, 'd8d0dd73be4fc56722f01fd8b8dc70f3dcf54914511d3019eeca117014861fcf'),
-      (10, 3, '9f7c2295efd4127876c3ec7b90e5f34de0e4b05c7b9646787460ac492244fd69'),
-      (11, 3, '52a462f0cf5ad675a874f06c9877d5192c97a3e7232c3f225c99df385500a6c0'),
-      (12, 3, 'f693daf3d192ae1797431842ce02d21e28d269e8ef4ec53336c8ec98940e84d6'),
-      (13, 3, 'b381b74d7315b0657c0a61a1a73f754ab1439a6184312638674b844286a4f0b0'),
-      (14, 3, 'e70f5de15ab5d36e4136f005986670198dd15a2f680b1da264dc05544616bdf9'),
-      (15, 3, '8a7cddf69eb85189d93da99f1f54001c2ce1c1cd006342540dbd1359d4a12096'),
-      (16, 3, '5fef36aca8c9f3e909e4e3eb754663aca0472aa8bb3f622fe57f01a99c40177f'),
-      (17, 3, '7c18bad4dccd2745f8b119205a9ec46d9fe21f97b01bafdec56c4f7534a2333a'),
-      (18, 3, '9279a03172d429c312c3b016267892680b3e64ae80d752af3ec95d9417023b0f'),
-      (19, 3, '519ada4fcae2da8f1eb93bc6c54d225ef404007a7bd6bfd57b9218622dfea7e6'),
-      (20, 3, '8bfe2342f2a42765c81ba2c0cf610090fb5db34f2530b70fa8e9bb0bd6ca6a9b'),
-      (21, 3, '619044422f8f4f463720df58e6a8b5a4278652e18fca43cbccfddc42cbc25625'),
-      (22, 3, 'df520461d62ff99d00c7bf1b69c26f41dc5077a7047bc5a93f50179c23666391'),
-      (23, 3, 'ad50c8833fec507a6477cc0f6be8b17a80bdac633f2e6c54eb37db0f5e4bc5c5'),
-      (24, 3, '7af8d8b96af9a360cf5aa0acfbb09c473d1e20c6977201297f768ae88152ccbc'),
-      (25, 3, '407e196069dda784e3808b86713f0009f41161ac320b5b6b388eefac7f8c40bd'),
-      (26, 3, 'dcd984019fa6454203ea634adb4e9580374318407a3dc759fbacd551c2ac895e'),
-      (27, 3, 'b40fc4c07743821df2162a2e77b892ce983e119c67e84c1a65a1a96ebaed37a7'),
-      (28, 3, '2f8e1e7a62234e4a7a4a5f0ecc97e4468cf487f872aeb9072e8561f9fecebe39'),
-      (29, 3, '71b6e79fb78e7f225301731113035838e7b54918f7e664fe025fc786c01d1dda'),
-      (30, 3, 'ae618607d1f320819d599b3e4000f5e56405413758da81577f77534e5b12a924'),
-      (31, 3, '2787144d6d91f31d182805bf346a7eee148c1c970d458249f956b649fa0a8d81'),
-      (32, 3, '0481348d1aa746063bea4a7ea2c19c3fb3109294c7afddec083e8bb4cb69a4fe'),
-      (33, 3, '717ee6f6fd31a73563627e8c3969c8c097832280076eb9efff753cfec5e8e18b'),
-      (34, 3, '83c654831b4fefc5c459b5ef28476335e461d231a105f3b1c8c97a5033ca510c'),
-      (35, 3, 'a53cfcc5a2ce1dbf086061052fd6566d2f74b41ac54728e03a08ab9bac358682'),
-      (36, 3, '42a3d575c0f790dfd5496f3209f82aac28f3dea9b674ac0b3da28d952cd629da'),
-      (37, 3, '0f9da15af83643a98da525cfbf9f0cff1613bb8d0532eae4e34ec221cd7dc3d8'),
-      (38, 3, '10bfd141686cb7e29cc2bf85d186f20523f7696d5629a930ccd24898c8837c26'),
-      (39, 3, 'e666306d70573103eade0ae52a77b77fbcd326c8c6ae2432990204b8dc36a5e9'),
-      (40, 3, 'e849d9c297f989a0060a0d6e436b2f41eb79ba2a0979e54a1016156600d5fcc5'),
-      (41, 3, '734102f17e507078790e042bfa754cc429aef9ec2778fd0d5fb67e06e1673716'),
-      (42, 3, '6e906520538a849c2ad27b86e7e3f4e52fd4edf436d550169921cd6904ac4a2d'),
-      (43, 3, '3296366720ab13fa2680a44c304e91085ead3eddf71e86bc9a80a7a326c05def'),
-      (44, 3, 'f43b3f38567960a1a63f328af998ee9e415dcccd28da9100509fea99eb8540da'),
-      (45, 3, 'd9fd8f91388fb1c391c477dca83d9bf02d034a34a77c293eb204c3d8ade9e6df'),
-      (46, 3, 'c2896fad36284666f7f93868b69c9c892f067f5cd716be0d42169346bd4e19da'),
-      (47, 3, 'af7ae2ee674f93fb954a7327f25e6879ace4711fb4e9b8d03c6b81065157a132'),
-      (48, 3, 'd1be9f84b060f9c290da5e04f6915083d689412f9f2834a8563b414edf297184'),
-      (49, 3, '86429542aa0e7f91bee1eeae95e6a4c78d4ba9a512f5030506f62d9c8b18da17'),
-      (50, 3, '2c612304e9f5668cc42e2f2d15216c37d0309b5874e4b7b474c6d31aef2880f5'),
-      (51, 3, '3ae929bd85f34babdec0bce346c16a53b6c883fabf15e1ade7682392128dd40a'),
-      (52, 3, '32926b86f5fdae097020b3453eb286b5c03c20bfaefa5f3c6fdbbca9438db741'),
-      (53, 3, '1e0979e4e8a46616b7037ee078b95a62fb5e690805c5a6ea89bcf4424915a9fc'),
-      (54, 3, '982766f58b639e021029ee074c91003eae01e9216e3103c7ba2135041aa8497b'),
-      (55, 3, '172f2ccf0ee98bd84f7f32f9c7776be8bdeacfbf80cd44bcf8998b7f63855727'),
-      (56, 3, 'c8f1d9c2b3d0ba74f4661f6049d802d42b6bdc748550063adaf14ab2d5777406'),
-      (57, 3, '94fe6fc24bff5913ee4b73054cdc08e8d0e4b575ebf5c0004066e965aaf17329'),
-      (58, 3, 'b858ca2aca58a73fad2cee617b661501694fcf44bc861e68a046607a89b32a40'),
-      (59, 3, 'dcecd136d170e63d01c95a1c94b891fe0a2861197ef2b3e2218058c6d991962b'),
-      (60, 3, 'ff6437c82da78d023f635e008f3c40a36348471394aa64bb61217bf9d9accbdc'),
-      (61, 3, '22b046b06f64335d3163fa195fb8c2557148a5c877150aa8880b08369ac67488'),
-      (62, 3, 'f561d763c24b373b17cc48be03b82895dde254e41374bc87aa1b226b868b1854'),
-      (63, 3, 'f5c1cc0f30e247680432a2a66d78e0764d0bc2c1a78ebe545e8ce6aa15828406'),
-      (64, 3, '22a702db5695fb589f1f5f742b973f9629573315bfeb1c30a6a2e60b7d217547'),
-      (65, 3, 'c54a8e60c71e352dbbed9135e3a47d89c917d184cc4310abd587dfd3b93572b0'),
-      (66, 3, 'd0d977ea526bd071ec905243b02df7f430925b8e6beac7f3d9dfd9aaea18d139'),
-      (67, 3, 'f8fefffeada48e542ff0cf1bedc6be9983d234e187e58f616faf87e5654c8659'),
-      (68, 3, '2b1137d823436d307033d74b037fa4c635e19bad133f786534c4c422c3fac34f'),
-      (69, 3, '9fd4b57ffb0744e81ab1d9b5214f9a906bf22a936a70e618246862b1b72d2100'),
-      (70, 3, 'f494527c49affb4c724f6f07cf54388624199b7928be05adaed2c719e333414d'),
-      (71, 3, 'fc8a5a12df62731279d84b16d7f4a167da1c7d5cdff12a4902f9f8aebf1a1fda'),
-      (72, 3, '51398f2feabd6711773e1df61e691b79381b62b87ec7f26ad716e965442c73cc'),
-      (73, 3, '3e2336dc385cf2d38004ab1418eaecedaaf7af4a8f1a270a7b23f42c7abdc8b2'),
-      (74, 3, '6482f1f2c55e7bfed26a6f229735e2c1e748fd2f76c41c67159b56ede8de03f2'),
-      (75, 3, '6622f075bceb94cfb89b6eb017cbea32156872cfab28e823e29ba46cec198122'),
-      (76, 3, '9478ba5a18081f3988f659b9be842e23b0ff091152a2cd82d99ac3ac0ec4d1db'),
-      (77, 3, '1fac77de58a593dea83e51b760014975b12ab2e11ac0ea743ee9ea1b3f2cde72'),
-      (78, 3, '767a1364ed6e78438b2412ceb1d5b5a08205b0b0933d43d6c7df35f6f90c3995'),
-      (79, 3, 'acb2c16fc77bcf494a0e4f559b51bdfd4aeec6631fc2740a44362408ccaec8ae'),
-      (80, 3, '498785f344f4ea103dad49a2ba50d56492080a74f875efa503d31f42d2be1e03'),
-      (81, 3, 'f4c09c088c2b5989d79015bf7005974b2f3210977d3f264ace240911b473067b'),
-      (82, 3, 'e75641f31c96bc79c45812d2104632ad0cf0f0f448c41ea06ba761be5785c98d'),
-      (83, 3, 'e805ff402af3a6886d6727e9b6a7ebcc41eb81d172fcf6c60bf7d867d07c41c2'),
-      (84, 3, '1b7b85c4bf602dd07553a0a4d0c6711b7c2414a80b24e04e341a680af54e0021'),
-      (85, 3, '6d6e70c43035f8a13177b1658fabdcf6f742c9f1d3afdc52b0ea17ccc8241f97'),
-      (86, 3, '995a56a7ccfad8ac87aca1e75084c8a68633b7f77d83c4d72f01775ba606e51b'),
-      (87, 3, 'be4511af2b1c6b851c3750404198e1bd3bd065eda0532689b66ad294fbbb2f94'),
-      (88, 3, 'a1f39437a691f188a4bf070f3bd930cabadff963ac70573b0022adb0179b744c'),
-      (89, 3, 'fdb891f068f361ead13e4721c98b308b06434de4d167201ea0e27abc4d51ee28'),
-      (90, 3, 'd9a087420e4598a1685d2402bb291aea0f23ab37f509150fbf1f13c709bd687a'),
-      (91, 3, '56a33efa352120c7bf78b51aa8cb1bcdd2f18ea44ec174efbe154b888d3a12ca'),
-      (92, 3, 'f9679874b21110cec35cee5555d5f0f0f3fe523b4c8d85d1857496adfc1179ab'),
-      (93, 3, '68821e04773d3d9121e83176ceb643e0386da9c3a807057a4c961bf90a16794a'),
-      (94, 3, 'fb697221360d6e50a1274f5f80fda88c4bbd11e530196c8e0f320a3e65a8d322'),
-      (95, 3, 'cf849b293533158ef989e31e50a30e000392cc4dfba272fb21c492d77622939b'),
-      (96, 3, '07c9af47160154b2cd9e1f0225a385ffa056c0536dd677b8f47408b2469efb73'),
-      (97, 3, '74eb32dae14d16f4308e0c43beed51c30526134576bc18b877a99f31e3f889f4'),
-      (98, 3, '7981b56b95164c4970a380507cd8421c1ec951eea751b66f253e0088c367eabe'),
-      (99, 3, '63fc7a34bab2da4aeabd9a82dd980c89d9de278fdd9a1645d2865b386e1ba54b'),
-      (100, 3, 'def26cea2850faec54862efdc56d27c36ed1a22a3d0e8330ebc6205dfcdbcbf2'),
-      (101, 3, '96c7f8cd5e51e627644a9c3ad15b05952ee3eee790169d9a6812036fe858953d'),
-      (102, 3, '520e00ca7bb45189e863d7997d16e13796957927c0cd6433bdafe6a57f461fba'),
-      (103, 3, '938a898e34fb80a650662524e307e0582c5341ed2feea2493a706672a472141b'),
-      (104, 3, 'dcc867b1ed027ccf382e7b37ce1400170a851b0833279c617dbdbbae04a604c4'),
-      (105, 3, 'f51cf7200884a6187d1486016c5782d306a2713389a0ec3722c813fc07f39b70'),
-      (106, 3, 'd4e9572e6c702a7035a8305ece457ccdf69fcc80050763633ae2be26b0e6a07a'),
-      (107, 3, '10c48045bec34c31964acfc3a190045dddd657c58a1be3f92d4f882155819dfb'),
-      (108, 3, 'c1ee0218c1197b5e4b87afd244e425f675b15a2551a093ba18fc2f0c26db3873'),
-      (109, 3, 'b269c8d5f8af396a9f18fe1dafcfc0ea2649cb6a19ddd8b632549b849762cce3'),
-      (110, 3, 'be9a3a301a4935cf903ad08e5ee7a12f3a5f93e085376ea72dc42ce1ac00beeb'),
-      (111, 3, '4e178cec9277fce737fb0e1093ed4bdc4c4060e509bf52c6f9423c8aefe507ea'),
-      (112, 3, '26fffd0c77de61d49875c83f6a259c0b1e721b30cd257170acf8f8ca23f27273'),
-      (113, 3, 'f8d701ddfc0e0941ec750b1c210156d19400413089ddae82c927cef78dd1fa1e'),
-      (114, 3, '99a0eadb9ce8e6560eadb75196e1a8885b7a802ccb9772419767642b15b60bd6'),
-      (115, 3, '2d06e22f32d4a961ac55703dd248ae6160500a84265ad343a2f8a9f79b4d74e8'),
-      (116, 3, '729374bdb748a99c232e65493019ea9f55995e91854b823643aa54d0ac5d4dcd'),
-      (117, 3, '42cc25ef39f0cf3d226486ba24ef2a15e691b98eabb54ea74b82820a34ef202a'),
-      (118, 3, 'd4e01353c16aaa2f96da0e906078b6443a372410b32f206132b9b5ff3e067c37'),
-      (119, 3, '46b159dc6223f32d53431314f9a7ad0edbb145c5be1e633469890c605b31f551'),
-      (120, 3, '63ecaa1b2a1aaac97b39dce47246ea3347e9779b736421f3f09fc17a732c09e4'),
-      (121, 3, '0701e174241e873dce4cfb36d02e1966285b18846c0244f1a8885989faa4f288'),
-      (122, 3, 'da4e91327f9882461e787179e7fde78eb5d2098ade7a3fcd655fff0d4572d000'),
-      (123, 3, '9f3b8abff670150384990f5160ae2327041fd8f627dcdb3a5f3a29e4098b1036'),
-      (124, 3, '9efb354214675973c9e1c2d9f33d007087db82e68ec8d8f32186270993d579f0'),
-      (125, 3, '52b65bd5345f8ec5353c1fb9cce38ba12bdcf2d72c0ff764746578ff3d024089'),
-      (126, 3, '766df351afa07608b0c12c47da3962eb4140201277b2e5df405e37d4ba54c8a1'),
-      (127, 3, 'e175561a847e9364eb9b97c356896d9ba01917ea88d57c7b868d9e7ee4e8ab23'),
-      (128, 3, '6af4dd52fa102fa62cd3701289ba884c5d6999f4fea89a9aaa2b9f4b4f1ef4d3'),
-      (129, 3, '5ce478f095bff5c56df741d852e8295efeca34ea7eb55ad2eaf7e9dc2e485e60'),
-      (130, 3, '498882d53fbc480fbc09094c464982389611f51e1493413e633609b51d4fbc18'),
-      (131, 3, '2d25c4e2b4ea7315536fb53af7105bc82476041e85e33409a13a2f6e0e49268b'),
-      (132, 3, 'e42ddf0b9e58e48f681505d49c2493859d76f117185ca0e2d4ec5f68e03f53e8'),
-      (133, 3, '0e34737fc28bda310c54ec13324da394da1d0b2d7e7e77b381f5890546dc3cc0'),
-      (134, 3, '4d75a3e264e972eef5a25fd1eb853b72eea250b49b206ae0333327330fd082dd'),
-      (135, 3, '3e8b82b4462cfb174940a482b8a684c7844237b986f50e3339b243871246fdd2'),
-      (136, 3, 'a40c8b0a938b6284115d31e55d4e85101ae5568f48ac14373d817fe276c66072'),
-      (137, 3, '3fe8a2eb0bd878f5af0ee929a6a8995bf8075423e3e5543394bf5bac7632f2bb'),
-      (138, 3, '267b69199bdcd2bbfbb89382b51c0c373eb4b5050c58c1f67cd99428c691edce'),
-      (139, 3, '74b4fcb48771099b0eed128bd55d97ad2ebc6686be290327963ec14ac3a21a13'),
-      (140, 3, '081b0c89bb1d098864ee31b24b5a932983a0131e5ed6b8f133223aa01ff1fa45'),
-      (141, 3, '4568fa3e4d030311ce19430ea42c81a3f47cf97a86edad53c615fb6c2a090997'),
-      (142, 3, '0f54bd4a1fbc5f30b649c6aa13268fbc37923316d5db82a83b0850b543b680e3'),
-      (143, 3, '0fa40fa76f718319c597a8fa757ed415fda8ddd59cebc97e4c546b2c4fd669d5'),
-      (144, 3, 'f16035e4a46f319adcbe0e6ed200366d817b96ebdd511458d1b69a4bfca811e7'),
-      (145, 3, 'ed679aca14f28faead096a9265177319b5aa381ded9faebdb73a745d94eddb90'),
-      (146, 3, 'a8f992f4f55282027bf172096e4571080e65c43a39dfe3275e4db1998707611c'),
-      (147, 3, 'e87643ab9c263cbf9159f7dfb262a157080ca8a8c8f5533af7ee2d80572d44a9'),
-      (148, 3, '875224976de432bffb674aacdafb25e633026f1e9b2263bbfc97ade91b7e648b'),
-      (149, 3, 'ce465501a61660702f3a6bd663033d682c092beabedb93dc9331930f1a2aa982'),
-      (150, 3, 'dd0cc8221fd2928180761c191ad06cf9e835e1e0b11de749b9364cee0a3ed581'),
-      (151, 3, 'cd5745285769d29e1e7f53af2a13181ed491897307d29e3c60712a879198e268'),
-      (152, 3, '29fb80657c6f4f9b05fe5a58f89ca62779704449250bf4734d7df79fdbae2285'),
-      (153, 3, '4082fd6e010e6f9a1d6fe937d57805c6b10693fd22962a46b9efbd4f106d31c6'),
-      (154, 3, '420c5f745bdd31942ccf8d21ac42b685dae3da4d0691cb59bf6c51d46e231551'),
-      (155, 3, '93d8f2b726f70f30817a747d94c0405c527b0eceaa90761ac1fe1b652e54a4ef'),
-      (156, 3, '9ae1932154066861cc5d026e266b15f32ae5e3d669531a46a212ae810c760b61'),
-      (157, 3, '283007a7c975b23fb4823e7b556dec78cb99530229dc191652158b2142e0b0bd'),
-      (158, 3, '14955aefa2cca9cbe19df6f9ed7fd6d6b0907babed7ee6f01f9b7cbcd349a8ab'),
-      (159, 3, 'be39ae67b90c095756fe6b06b85321de80a9a5d786cfb71d149e74f2ed07dd8c'),
-      (160, 3, 'feff9aea7207b7a95d6150ddcf74da290add90d992f85ffa2f34cd02324e19f9'),
-      (161, 3, '3635937a5a6bbdd192be636fb851795d56b178f467b6fb7ff6476c6f05a41855'),
-      (162, 3, '57e4ba8839273584ffe3277eefe7a7f6317a91d6cb20164c7aaf0c6f06ed91bc'),
-      (163, 3, '5dd7411366f604a7e1b1cf464f6080813ae1fe0049060c82086f1bdf8461d064'),
-      (164, 3, '0062414e15504a1d7d0363d3ad1039647dbc1713ca43396385d06cf5508d627c'),
-      (165, 3, '28736e6b4512b2dd5ef1b5264c2b56bb841fdc8e45e957eed9909a175141f4c4'),
-      (166, 3, '86162e70d6e2ba3fcbca3b08dbbd9b3674ff2d2e36d9bf9607ce5217d1e97981'),
-      (167, 3, 'b923fe31d14c91a80c65e865b14b3d037c66f9732225c40152aa63cc8ef5a437'),
-      (168, 3, '868003a283670e5f6504e188eae2f54fd9f5dcd6fe2da96d9734f80c03f6509d'),
-      (169, 3, '1f756119c42204921d89e6d40e4a9b551ae0c971555dda5c96ef1b7b04295cbe'),
-      (170, 3, 'c8ed86ff04015204293765c4744b9d995161fe4f4639939b6011215f74211aa8'),
-      (171, 3, 'a2f005b0c0e84978bb8cbdedccb203c266eb7656d417ece52f38fe379c810971'),
-      (172, 3, '10a1d8e8eab1e368dc95632c5e5fd37c2183f4ee9e07b2b0b789d173cc81d70f'),
-      (173, 3, 'dc4b626c0bdd5d38e08e41a98356e490d228c696c29e1ed6821b6deabfde7722'),
-      (174, 3, '082b44383ca4db09f6e8e5be03b56ac59e49cade94a48e7de3830b162791dd72'),
-      (175, 3, '8c2bb54fcb02c72ad0635f0150a55062cd3fc02ea1d65bc67a510a95a3933292'),
-      (176, 3, 'b2f721014c922def4aa766e77ce1cb53eca821d262e987cda89428ad83c197b6'),
-      (177, 3, '96d879b23fcdded4850009f3ddfb43acc3eaccfd1d9f60548526d8e06d67ad4f'),
-      (178, 3, '700782f57d386ac1e85be11521e0c766ce230d6cd7527adb7957d29f9eba9e49'),
-      (179, 3, '33fc7344ac5e0e1ce73c66b35a11e9a132e01f7fe653ddda9cf12682c32274e9'),
-      (180, 3, '2528090f6087db99783ca5fdb53363d7c6496df93b4da345ad37067a2dd51301'),
-      (181, 3, '9d3fa643932adbc46454a9aaa8b8c88575de4ecb0c0e3dab42e85742cb3bee20'),
-      (182, 3, '36bf8cd66f76f94f5276511b394c4dec8678ae5748e7d41845903351b9db3131'),
-      (183, 3, '0edf16682debaa24657ec5a476b751078f2344774ec6135a2359f8d62f7240fa'),
-      (184, 3, 'c590bf7b955475485fd1a39b2021af09509d19d27432566f02ae68d569f6a478'),
-      (185, 3, '60c2fd4af3e55a44a9e17c9b8f4c244188f846054d59f67a2905639832445f8a'),
-      (186, 3, '8d56c753b48b2f09afce65f01b3653d24a3b20d0a8228f11e8a051d781a48ebc'),
-      (187, 3, '5829c00ecf9f65ab26c2051bd636f1611c7e99996ed2e90bd5c71905089a488f'),
-      (188, 3, '7e1b9c5030517b7d5fbb63636340256b2e3417c46186e7e4f02bf24d31b716c1'),
-      (189, 3, 'b111e06bdbbdf46b212f86c195030f9b8cbccb6eb7a4e016d0326fee4e12e989'),
-      (190, 3, 'b13a0975e4e2f8b20593e20134c6e598dd316d630f5600470ead0400e6c95bfe'),
-      (191, 3, 'c55b68d259ff23d74144f115faefc1967ae94fa573d61f56fadf0d9bf465a11a'),
-      (192, 3, 'e82b7a7044be3b61fb3e16c30ab77af3ddc50ca3729fecc5c90c1fd943f93535'),
-      (193, 3, '024671bf999280065cfc1ef4838710452fed2317ce13d68d0eda495953d03349'),
-      (194, 3, '5515a5977ab1203b4fc1571626ea76fdb2463b2d32c245030e348b045c57c923'),
-      (195, 3, '4c61a587395a044812826997fee0a73616e2219eb1793a6ab01d75e520d9a9e8'),
-      (196, 3, '88d49b86960552e2db044da48d960de20bab5d3a3bf58168d86be68d113717dc'),
-      (197, 3, 'ab6b3ff73b14ebad8ff1613b6cd84952731e58f6cde88da8e1f5e1274b1aca01'),
-      (198, 3, '0528dce858f1cb6bd97a48a8a2a00bb80b396ecd193209383ed37748a12b4f7a'),
-      (199, 3, 'bef74b77d658ef22329d29d301caf23e71362fefa2e90a99bc44577b3bedb646'),
-      (200, 3, '5df2b308c358361720430186c8ffe4eed5ae6beed4741d1882b5a21b4b23a2c4'),
-      (201, 3, 'd74405d15fbb8b9a8643792a477b789a136c2325a46e1702e3e0a508ed8cf64e'),
-      (202, 3, 'ed9032c172341424419e2ed1af7f666b7941aa51d7925e046ad0dddd3791fd00'),
-      (203, 3, 'b6a862fc80a50d24e306b75a4cf61daa8419b18b9ee3f9c76acad9add498962d'),
-      (204, 3, 'c546d74ec75d4f3f478d42c93bd0148a31202c97f12bf96323b9c8a2f70b839e'),
-      (205, 3, '71bce0ac882a170aa91380d4b6becd871b0d1758509f514313ed85c018207fc1'),
-      (206, 3, '428ce17412094aa820aa3702874ab081669357d0d45defa5f170ebd07b302347'),
-      (207, 3, '781456b14fd92fb23183f4df13d2dd39c4793fe50c8259e8ab5ec4c6cc325155'),
-      (208, 3, 'dc9f74a1fe677a35d9d75b23ffdc4cf172a32bfd8588c43932a56d21fa0e026b'),
-      (209, 3, 'df848739d4f845befd3da3cf2c2808dc9425c25b2f55b199919552177ca8078f'),
-      (210, 3, '80fb427d51584ca9ced2e9a270286e685261a114bde5c4c277a5677274b10295'),
-      (211, 3, '8bec7a2ee1b142a80242e675cc90feb06647b937d47f18f42f70cfa3dd2cbaf0'),
-      (212, 3, 'bd84a55543efb81adf186fdd557dc67f5cf0f7c56b01a4d08d4264f63cab2102'),
-      (213, 3, 'd0197ab4f658481912c61231bf1aab3d140f41b399fcd0de853406faec8dabdc'),
-      (214, 3, 'e9302be7766edc5f0ca0f55468a0aa18ea89bc942c9a20401dc163ab385a7438'),
-      (215, 3, 'fb5a7260f1c3beb25c04bfdacb94da5bdf142fc4c0915e01ebc71f25b430a9d3'),
-      (216, 3, 'd9b64dc2b24612fa51ab27a32dde6051d0c4b915fdbd38a568993e1571e34f6d'),
-      (217, 3, '46f1f18688242e040ac700d0e08f9826203f8461c2c52c186464e1c74035ae3a'),
-      (218, 3, '552b03a9b53b662b565459c92edf79d2e1ffbd385664eaf0c0a0e61f57fb551d'),
-      (219, 3, 'b75d12ecc7e9f202c49c1c2901ae21b3cdc7c4e0face8d03e480ee36ba210fb4'),
-      (220, 3, '63f8e7f61794ba641b177275b17f0c6b7c5444a6a6b4f4d6c8c66cb4dfb3c3c2'),
-      (221, 3, '9c47c13ed886bf4e335a5efeff3629ffe9462a06d09229514a09ff100ced15c8'),
-      (222, 3, '77454bc62daa6796ab627fd8aa82841a478c28636ead39634573559300454588'),
-      (223, 3, 'e7470669d18ee53a84ad39c6c65b6f33ed3a00ccabba9f49dad99b7e03a9e791'),
-      (224, 3, '0e0043b9ff2dd02ad35ffec2d736b811b268eafd96c321a4f58a11fb5644e9f2'),
-      (225, 3, '8df00848c89981c648f8f476fb10a0359f5c5753eb81fadc44d136e7566b6b3a'),
-      (226, 3, 'a46e68bd904a8d92b8609b4b7c5313fa557ff94a644a4ba98a93cf8caf725df4'),
-      (227, 3, 'fc8d638511d25d5f2aff1c68f70d5c24775ba015b3bd387593e1c7af53cddc08'),
-      (228, 3, 'db72f291c94c4c6c52c2e82190905c1dc37b718c0fd4ed450adeecac601e7308'),
-      (229, 3, '41e476a62449fb4dea386310c84b6544c98caa3f98ee792dd3490f89cb3f915d'),
-      (230, 3, '69c5d39419bf697cd9c1d57fce421e9a0ed8e560cb705bb2a9454173b1fb72fb'),
-      (231, 3, '278b5200345f4f3b4fb1bcd91c9e75e11ee494cb3726483aa9ee9e59d69cf74d'),
-      (232, 3, '578f68f27409c93bcb9878e170818117fc06b5e5547135a9637b0ea6b5f6e6f6'),
-      (233, 3, 'db9164e112cf911a304f4bfce0df99d0f566ee01c6eb511330e8df4781de3e47'),
-      (234, 3, 'f1a7ac971ddd3f565ce35ddf6925c777119eaa91e726e692133987cb9f2e6e20'),
-      (235, 3, 'c12381fa067d018e9da4be6a1dfe415d4dfd51157f3cf6bc2142ab8c18efbc6b'),
-      (236, 3, 'c1486e22dcfcafb42e5591f0da944c4e27a9d2967ddc89af031ff35dd7333c87'),
-      (237, 3, 'ae030e800a470a15bf3154af52386f77df4a4d17c85b760e49eedd84be71001e'),
-      (238, 3, '0206fe8aca27e358b290b1d47cbf6e8c4a2c8d86472a5343801fa4c322dbcf8f'),
-      (239, 3, '34501a142ce2c612a27a9c0d5901ce7b879875c5d38ee1e8d8f82d03e22533ec'),
-      (240, 3, 'f0b587471116ceb36b337095d5291ad525fbc6609a2de009ffb57016f683fd1e'),
-      (241, 3, '2ebe4e9cbcba8a8911e6ce6b1a5ac5ec9c29398381d4e87d05ded2419e684e07'),
-      (242, 3, '457a942429d3fd1743bb47d9fb9b3463ffeba1f27cd5ab0c5c069feaf72aa6d2'),
-      (243, 3, 'ae0db8418f7f6c7d8c931bf611bf3cbe8b9f55ba6d7c00115cd14abfb11365b1'),
-      (244, 3, '7e5e3ee5b93958d1006943f0b3c316ae463b09d96c4f869fba5f7ff9fa9d972d'),
-      (245, 3, 'aa32fd6b4f437695eb5d0f53b613d456d51a84146aa9540202c2efec41a08e17'),
-      (246, 3, '5ab584ceb62423fb58e3674cfd378848646bd23312b1bbf8249a587f6d7428f8'),
-      (247, 3, '4080d15977f7164c2bb0f6d51239001280ffea8c0145c4f33d1fec847f62c7c9'),
-      (248, 3, '98249191aaa5aa7d744a64acc65c30c2647c5971c905806b5c98ef20edbce5f3'),
-      (249, 3, '17d40f44c1f518d315ec081568a4780a89bc11bdc826983f2bc4a5e9ed619df4'),
-      (250, 3, '08dd9c3a1f803ff724f3b6ebe529552135fa4e73d72c53850a5a500bea0bcb87'),
-      (251, 3, 'ffc3c9df0ffe025f5f0c20fcef3af5b09c5709e7d53b9c95882af4b1ea6878b9'),
-      (252, 3, 'c7cc23dc19365a7f10f6f6bb34f504a5f26b48f25bc0f163767c414952e118c6'),
-      (253, 3, '8286fd70ed23194c48cff2d1c91fba777c0568312be699d7b950b6c7ede7a51d'),
-      (254, 3, 'a512249b6803ecc8defac96f380ff81b045025b753f3800c2f4a93982068e685'),
-      (255, 3, '27a57ba9c143be3c46739e634ab2cab272934a48a007d8254c241fc274e1df24'),
-      (256, 3, '97502fdd97d264b2a85d8ea746f193169c1dadc29f686ccc7032b8b7b0e5c136'),
-      (257, 3, '6baa958a21e4aa9a9d741e0f0cf45aed1025a9f3b9c5fca9f49a2547a87ad2c7'),
-      (258, 3, '90ede64c8b18438d12941546817afdd2ad417e4ab80032ac528754722d68db86'),
-      (259, 3, 'b1e83b4b7e3ac0750c4251ae4dfbd63d91d3d2d6af25bab5f26158043a5d8930'),
-      (260, 3, 'a15cfb2d3ed36ffc2d3678fb3a774525cb3029865ab6d7c3fdca8934d2bb9f85'),
-      (261, 3, '7c48cbc08c8c84c2c17f1a8d76885a1a85b711689f8d7f666ed70f80cb2f9dd4'),
-      (262, 3, '3856c9f33ee5ff7703b3fe7045aca5272aea6d9b584eb90ecc9f8fcf3d78a00d'),
-      (263, 3, '4ec42196bfdbbb5fedaa27887008662ea162d839492d7af0be8d7eed452b5908'),
-      (264, 3, '5c495646e7ac688896cb3603b8d8737aaef01b80c6336d0d7b099e8a0f6792db'),
-      (265, 3, '5b5a418d25b10a748227e5c3b1fb20310953d8ffe56d7cfd5224f9bfcc986c46'),
-      (266, 3, 'ef193dc6e6739662a6f26fc16d4dbb66b741d5e49b8ddc75bf0a3bd52f693e7e'),
-      (267, 3, 'fc064aacdb9a738bea022da673a404784ff0db64eb02856500db16ba8b2cc760'),
-      (268, 3, '444688106f6a91202dfe92c543551fbba3407c75a7007ee56599e3b228a481d7'),
-      (269, 3, 'ad54d46472c81da2d469fb6da2e4eb187ce5af24149e251c4489fd6c6a4a70d3'),
-      (270, 3, 'ceb08ae31496bf2bb2bbe3c9afda3dfa0ce3c7466cdef0af8a6a383853625402'),
-      (271, 3, '626b899b0cff3488ca3a283e873dfb4876a53a21d7f043024e9dd7e1c8ca4d99'),
-      (272, 3, '743a732d49dfc63d9291cfa0d4f0593156c9c77f890b3bad582a8fb659d049b1'),
-      (273, 3, '8937a7047bc1239479e4572a722df3e479137a4d658535a701c4f5c077c11569'),
-      (274, 3, 'db4c818f1b2613e8ad9fd79b059c4e4f44642387db99891f7826021e99d6554d'),
-      (275, 3, 'cad3fb683c40ae20688086836b354f6d43f7d0b1b82d55dba9ca61f8151dd12e'),
-      (276, 3, '34aa32f1cdfa82378e5a1d798afcebe497b7b6d45434f07678e2d7c5541b9700'),
-      (277, 3, '76c37455cce816895ac79cfe2facc38bf728bcba015f85c20c6b23fe5727442e'),
-      (278, 3, '9f424f68184b686d036f22a61a544e20b5ce6eb67304eb555058fbb7e22102ae'),
-      (279, 3, 'a37e0b2f676d71279c3499aeecc7c620fa448b202eb039f60b8b5dfc35ab80da'),
-      (280, 3, '2450a6e78a2ec1d29fe8250973ca23948278925e7cf38dea8cef0f4197b34edb'),
-      (281, 3, 'eced86dab5381ffcf9c85e92a2dbaba26d3eb505635d629616f1093186e872c5'),
-      (282, 3, '52669cd4d354ddc025781ea0e5e341a5f4700e2776c858aa7f54a32edce26ee5'),
-      (283, 3, '499d97d061bd7f0da7cdc3695e48a4cee7ed7a2e62ac87dbb1a1fbb0fb91ed8b'),
-      (284, 3, '78318aaff01c66561f40202fa5760e34ae719aa81a7d05380e4ec057b83e3f92'),
-      (285, 3, 'd80738d98276b87b4bfb03fd406b838fa88198fd803f4022a332978f6b3325cb'),
-      (286, 3, '74783f8e25e73fe1b8faa4d679d0db9f1cad363a47a83b83e0f6b0c37806c677'),
-      (287, 3, '910a9b4696393359241cdae239a1b04476331b7a1d2dfa94f3ffe50072cb791f'),
-      (288, 3, '3d69aed435630a8e60e128c1da621cff6f706c39726ffcdf8cf59d2b34a50546'),
-      (289, 3, 'c30e6c2e7b2581fb5eeae7c3b5bc7a75607238ba4dbc335235b0e82d0ca219ef'),
-      (290, 3, 'b6f9a1fd13391dd95e94eee34f34f964767521bd548a2aa4685bc20da8077ad9'),
-      (291, 3, '2e76cf2ae2dd53cb2320f10bbf42ee62c59aeb1e59770aa87538c829c0b259b2'),
-      (292, 3, 'f8199e6854662e4c982763c29e3ce9ea96193f929cd7d4a15378a9040809cc15'),
-      (293, 3, '96190f9eaf18bf30cf3d37fcecda7cb3205aaeaeb7e7589a8c874807cfde2e71'),
-      (294, 3, 'ecc093b5c74cee9db773505437fa70e9609bb931d11ea981da803842f608fb21'),
-      (295, 3, 'd684e7c3e9003bfff0c0a120797cc96df6d46ac43f402c1ad4feff2d8cc4c56e'),
-      (296, 3, '793698c805e1e44061935adc9587a3e3968b5b9f0b4dc85d15a4b8dd4b3f54b3'),
-      (297, 3, '42657b5248681fea9ca0ef7d0c40763eee545924d64fbb1379939db20e345735'),
-      (298, 3, 'd3a7e84be7fed1d723c58a94df35dc911cfc03b00811cc947d1ece974fa021c5'),
-      (299, 3, '6acc1edf92a52bcb0dd5465616d3f7692da8c74e3a23aec2d4e3eece652018db'),
-      (300, 3, '8f874415a3b1ac24e2d79dd667aa67bd90c1203597a6ba0c272b6be143fc0d86'),
-      (301, 3, '0aef57f54ff51a414402b4f97ca247f366927b7f18149a22ea47a9527c623444'),
-      (302, 3, '227cb6924890583a81b48fe96f19d4429532b9d9511bbc804a09c91deccae2ca'),
-      (303, 3, '8f520f5793b327f4e4c7d32d94d3dfcbe263744558ddab25c84ad83b977d3bbd'),
-      (304, 3, '75b719cbc8b3026a98cbfdc7f43b364e469615c34eb7775ab10cd5c24bc1e8a6'),
-      (305, 3, '35a82adcb4e276357d0177205557ec37d65efae6d8837edbdccdecdf8a11da04'),
-      (306, 3, '93065a693c3ac03bf76e9adba3c1c83ece61551ddf01941554065fa0421e386a'),
-      (307, 3, '4cbf405bf98dd6d4b313549e36b30a9722b28c68cbc94a5eed11721b7ee1cfac'),
-      (308, 3, 'ff28d8d57dbfc52c460275c007be471c7c7c3b72441c8b612973ebc4fb7923ce'),
-      (309, 3, 'cd14dca253456f6310cf6ad39a3a45e3e4b3e311efb61021a8c1dac1135ffdff'),
-      (310, 3, '07444271ded80b3ad78956afd6ef698a4b4671cdde55dda22cd9a25d3ff8eaa3'),
-      (311, 3, 'd109b48c51429e4a9c973e80ba4396902b3255c5dd79c7f80e8dd82da3e34352'),
-      (312, 3, 'f090b9302819e7495275e54ab4eae59fa4ce1e1531e9f5f9071274628171031a'),
-      (313, 3, '94a24e12f9555e5e510dc6449fc95e499ccd4354363e2a4f2d8f9b798a226dc3'),
-      (314, 3, '400281d4fd7c5242e46d31ee3366e92f4d5900ddb78254130ff17e634563ab17'),
-      (315, 3, '8d896f8d97b03871d1cda5555b30b0b2154f7dbdf13aba568f53286299ee9430'),
-      (316, 3, 'c244416d1bd521aa8691c22b25623f58c7acbc4a3b50ee66c20b86590435dfc6'),
-      (317, 3, 'a22948544494e5b406816f3b188f81355791168fb6add3a94f26beceded1da99'),
-      (318, 3, '89308394dca947bc8eab9f1fad6b1fc180ce63871b0bbfbcf890a7ea35ac44b1'),
-      (319, 3, 'accc5a3becd19eb7400d5817ab8c988730aed39f9914d74c495af448af81fc28'),
-      (320, 3, 'bfae3c7c2694f4159eec934f029f87b4698738515faf633aa6c193653ccb5625'),
-      (321, 3, '5f9495644e0cfcd99d185e1c17e408f6991292b0c7823f8305bcac4420e17228'),
-      (322, 3, 'a5ca0ad80888e95148cf2bc3f0879a1ad2b64fb4a24f226285ec742a82128cb5'),
-      (323, 3, 'f8067715c557e39ba6413c1c3d03e84d061d305806b591988c69342c17f4767d'),
-      (324, 3, '566ef6be65d991f15c8b4e02241df27ca7fae65446ee5d6d57584084cb370ff5'),
-      (325, 3, 'bbfc96695a6af287f97440ef911c223963fd222cf56aa6b6fd522f7365132177'),
-      (326, 3, 'ed711ec7342da1c1125f236d18f4d96022e1f23fc4edaafefd529ad3bd0a058c'),
-      (327, 3, '1e4a246e4bb4a4f31b24eda81fba4dcd7269cee11d6e0098fd45329cb4502d41'),
-      (328, 3, '831a526e631cf54997ecc08fa5ccadf53ee8b2584f65388d3cc4921dfda7cd85'),
-      (329, 3, '0834c1026055ea6c9e1768ba636a8cdbf7f2b9ac5e6b4adea4308d6e6f461b9f'),
-      (330, 3, '3c9705b618be9bf4ab5482636ff8d5683b26ca40ee8f7963838968a86f9337ab'),
-      (331, 3, '14b957d116b435d8edeafa4ff585c3589580a351f4a17cd9f9847488e48392ef'),
-      (332, 3, '7d0d24077a8aa548b63f06e6608a15700aa768056844a759c387e098558bbb05'),
-      (333, 3, '945637d852a1070336f2bce0d051a07c818bcbfd24bc4a32c9ba737575ce915f'),
-      (334, 3, 'e9a5b225a48aee7eb38b6601048b0afdd924d9d76527176c99dced50d8b366d2'),
-      (335, 3, '283726d0743893a6236db47b17cfca2a25b0e042bc3a6dc759d9d3dceede1bfe'),
-      (336, 3, '0df7a906b6c0b1ee14366d9388ebbb4633ee2effa16dadb6091a5cdb9839e787'),
-      (337, 3, 'f50071eeb2aec3d68adb05d136bce0c0cadd1184a58404b8f164a331dbd3a72c'),
-      (338, 3, 'ee86c19b0002c7b03d8e4aa595490c9afe684c56c790c6c8f6d950b9b90beeca'),
-      (339, 3, 'fd466e37c04b55f9730ce0838414d4914ebae9f97d65de588596f255dd8e8b8c'),
-      (340, 3, 'dfde2b95524d3f683cc99a04617c1893f3f0a25f5d0e6e80f5a5b47840165881'),
-      (341, 3, 'e54b7580a263eb4638b060621694d22083eafc692edec240f98db2c7d3ac081a'),
-      (342, 3, '6935be7e054481749122e559e850aa4dc6edc5f5fbc298abfc1839142576af18'),
-      (343, 3, '371e3cbe27be48b41ac7d81d184c0aa9c992bfd3618b27a88368920f3c5538ef'),
-      (344, 3, 'c1edeee61a05150792e34bc2aa1d4b879bc8044f047d5795d573424e8c345273'),
-      (345, 3, 'd5811fb8c2bce7303114daa5ca812c025526d965ed8b2f0480d77ab885e8bf34'),
-      (346, 3, '65e65aa35d40e153d84a1041dadb9f8c1dab80fea8d51e45e83c42085d0d251a'),
-      (347, 3, '9545feae1823d239b6af238e9a946c388c4a7ec2005d0cf49e0982c8cdf202d7'),
-      (348, 3, '6668259b3dc1d0f85af78eae60647425bd7ff7e6650fcffd98290f9abecdd116'),
-      (349, 3, 'a6acdb424da6f4db16ddebca84e8ee1cbd90982bdda129c17787988a489b38eb'),
-      (350, 3, '9ec20a856892e9e53f7cce76d29f34e517dc7a0a42798146ccd1bb555479b400'),
-      (351, 3, 'f1c1084744df7eb441736b7a078d292a0d632095d8b0520008e73bde058ac5f0'),
-      (352, 3, '5f4bd02bebbd4a4e7cda5883ec9da8fddbc74ada566a38c145a47392a5d8c383'),
-      (353, 3, '7cc5d38e31faf49b4e51d3a69fbc5161dafa57ad42ace45cc8c6d03a2365bd55'),
-      (354, 3, 'cf97baceb2e5ee3d5e20f6f005444e1eb937f1394f4142a145ba00ca2af66569'),
-      (355, 3, '3d8484d0416a967d15eac8f618c74123137ac377f1cfe60b1b19f2b921bbffe8'),
-      (356, 3, '122d0ecd0b50e7f2f3f795741f07cbfcbb2708fa2eed820d6353534f06f3c0c7'),
-      (357, 3, '92c69dafe9b28cedf8fa802012500ce2cc3970b226dcb3a670f07c6a9a74deda'),
-      (358, 3, '72b3c64e0f507a0d27c0b585e568ffb7f3aaad3fb3e70dc471ee1574fd6e1fba'),
-      (359, 3, '7f05702c1ea28f1a9dca61d709a13638567332275a35a0dad54e2c703685bbec'),
-      (360, 3, '50174af2682c65d0be78df5445ede64d6996274a4a31f70ed1c3c8fb83f1f38a'),
-      (361, 3, '2342e16da781005b8e9323e87f4a0100636a109a1e448abc857377dc59216ee9'),
-      (362, 3, '263d81ee49967d00302a952fd52d8caf8b15a54955679a7869abcccfb3a55dca'),
-      (363, 3, 'e32d423ced5830ce794cbda2196939349a2c18abce8c25cb8518dcc43c375ffa'),
-      (364, 3, '58f03abfeb7ca669ce4c0c38bee37b2fce831fcc7c37841ef356ec29741f991b'),
-      (365, 3, 'a0ebd74e0d765867693169b996c8457e227a7ebc49637aec2561d27135408a36'),
-      (366, 3, '9ac9bca069f4c7bdcec4f4988c8c200c99ff4146e3a540814ffaf704e501ff19'),
-      (367, 3, '13438fd1d68a621defe02dd4a6e72a274e3b337c51952d7c6c80991684473338'),
-      (368, 3, 'c1445ed743ecb5de74d8b57782679ff676bf03ff831fb5afc696c47f73e24afa'),
-      (369, 3, 'd19bfc9f25b4e85ecfaa3f1352a1a39357f4678e80911a93acf24b40e0954657'),
-      (370, 3, '48ac809969c4f3ae63d5a314faee67474418bfd2524b1a644dcf94e5238f4c17'),
-      (371, 3, '75495bb3e08f17f4cd696ed593f13656345c5e10e31f4eaaf50d14ae06d103dc'),
-      (372, 3, '82adfc06872bf931c838f87fc16fab3fcfe290ed75832c1536d82346706c6b85'),
-      (373, 3, 'b2c60548698d2399518a51a2f29a113d0ef029c3b7d9eebea54a35faccdf8ceb'),
-      (374, 3, '286eac93c0b057602637362116264a58002223c2dbeaec108780df2af2e9e602'),
-      (375, 3, '12fd7cb3440f5218c88ceec6276347b5b8440d9d82a41e80b71cdfcd97807cd5'),
-      (376, 3, 'ee8c4a2cf06cc0ffece2ef7fe55c4cc74622d25d8ad01e2922a8f8aacd8b6895'),
-      (377, 3, '764ea298fb9974dea60baf9cce1d8446176c91d9d849045caa4034ac7be1113c'),
-      (378, 3, 'b4468be2a6415833c7cf685f617d94bf8d95ae18f1d85aab72e9ec1561353ef2'),
-      (379, 3, '347dfff8b157b0e4b71d1313e5002fb8ce54594bdb53eed45fb27666118c7998'),
-      (380, 3, 'bd07026c9d469351712950eb3ce95e9d30aa929f2fe10169ede93b2a7549f5ac'),
-      (381, 3, 'bd62118a9073e205f292f70297ad7081bc0c6f91ccb3a6b6678e4306d236b7f0'),
-      (382, 3, '0416d10ae22a9984fbfee558137d3c11ade1287c381c68db70af38211fd1599d'),
-      (383, 3, 'aabed978285228977668259623776b45a54e06783ffa039fee81b602387f9727'),
-      (384, 3, '298c645adccabb8ca109e907085843a36457ed83b620673e477c30eee89df4cf'),
-      (385, 3, '24f6cf3a24ec5ab6a3a56a015b261791ee9bc710b7e22467500ac8875a9f10b3'),
-      (386, 3, 'd42291e70d23bc53b492ef8699f5ec71d358f343ffa3c0baf99916ac095279d1'),
-      (387, 3, 'b83935707a9d7d18bde6951ad8972371494cc01ff5b3d1adafbe6351df930cd0'),
-      (388, 3, 'fd66da4b0b95fa8aab2e684027337eda01d2357ebb1549947c4dd40725aad5f5'),
-      (389, 3, 'e018f9a975ae89431beeda8d0c0af25d31f336f5b97d52e92d1bea9cfd870340'),
-      (390, 3, 'b5d1ad60a3ba42be5771bbdb89b617b31b2c3d5b2cabe5572fe575a5c01d166b'),
-      (391, 3, '85d4f443b1bd7925386157c76c8fdcb46082efdbb04fbd7a6e8d8ad50c4b49c8'),
-      (392, 3, 'c0b969d65d0830967b6956c17e695f2cabe1cd1b23f118b55f36538322689619'),
-      (393, 3, '53f7a9093956ab49fcb003501776b087e055862ac38b8bd12d04d5ee50785f54'),
-      (394, 3, 'a557effa458f8da18806e432cbe53b91a17a84b43eea9e44aaba0f523813ac23'),
-      (395, 3, '23185dd940547c4be78c06c82518ad97156d2b5eccaf357f6962f5cd81ba3ce8'),
-      (396, 3, '2c17415d3d2e704661e966bd80db4322f0fe4871b2292f443d22020f410c2c74'),
-      (397, 3, 'ec602a8ea9ac35fb6a13d9f55c95456d22064b3e10d1c51ab6e1c1ca37f1bc39'),
-      (398, 3, 'f73774badb903ff5328f39fabc3021ad3268aa33cf77d488e0738e0a2ed8d7c7'),
-      (399, 3, '28f80f695efa84d33bf82d69af04ae87ccf95416109d418c71fefa95e3da9838'),
-      (400, 3, 'f269d9186b3138f6f2ae034fcfdf4a4faaa99cf33c495b8e144c3c1ca427cea1'),
-      (401, 3, '2e11d8c37d592d7d7923d0318974f623ff43bbf7490cef1258980f7b85b8f9bc'),
-      (402, 3, '8ef6a4c9b53ba2c372122b37b87d648613c4073baab68c37df1e8b25b85ac9f3'),
-      (403, 3, 'bd9ab22a31f11dd344e7d1afe7b4c3188a7a92e60dd9d01fe715d45a63ffc14d'),
-      (404, 3, '020b46f0ccace0ec99cced93dc6d95815992dc736600a276b032554cc96f9e3e'),
-      (405, 3, '85cc11f156c66bc872e8f4d1f7ee17825207093d1daf2323250ae47790627ad3'),
-      (406, 3, 'b0ab5165f1ca34507e222f1a9ff4df38c53c705e572da8835c258846a5a76e4f'),
-      (407, 3, '34e30cfebc7814cd86bf411d770f7ffa0ff619dc51f54440f5df448c421e4356'),
-      (408, 3, 'f45123d786afc73edfb5a6af2e88cf3d28c0baecef5bc2390229f01a042fafab'),
-      (409, 3, 'd105a77a05e5d5eb093f439836a093c528c6094cd4471e64d225f57eee575ac7'),
-      (410, 3, '1bb185dba7b4986abaf6fdc25281ae1077c9e3f2db2e2075919f5db6043b6b42'),
-      (411, 3, 'd5bbfb524a8f78f02b504d11aea4fe1c81ecb3a3ba9a301f1ae78b649c4e4968'),
-      (412, 3, '272e1829885c577aa734724f252867e3d4285a3e389e34e9d47f03a4a7b45c58'),
-      (413, 3, '455c6448724910871085851c08a14ad42a247f32421dcddeaaa1bdc1b7732172'),
-      (414, 3, '8fcf113e67ee9f42209dcc854d64fff03d2c5e85f756ae30434217c69818e0f9'),
-      (415, 3, '4f6d3f3e07b417d70617d5875eee1b26e3ed5c4949615f44fddf37f8d1c3b34c'),
-      (416, 3, '626dcf994778e726fa106dd1cc74af471948b928629501f104a3e09f5b140084'),
-      (417, 3, '638c0d0110fd2a0d404303978939b94dff430718c320103333178fdd3c661760'),
-      (418, 3, '6d6a494f510f0fee6c88cf73a2e7ab441b5560e2207b31b4ff4b0843dea442e7'),
-      (419, 3, 'c32d2e94031f906ce1cb16ed5619b64d0b70e0b16c69828cdb45a022502c763c'),
-      (420, 3, 'e64ff2fd9bd53712088f660e0488c600789162b057c50f8e524f6b9c93430911'),
-      (421, 3, '14dd6506a8f5bc2fdbeda38f1860f81692cab33d41503edac9c15e5a67c4d7cb'),
-      (422, 3, 'db25a0147c420473f1808272fa88d51b44aaea11bd1cf67df174bba84ee172fd'),
-      (423, 3, 'e0dbde138d293dcb648f061cd6b0118dc63432e64141ff0d9865ba3e1fb93c2c'),
-      (424, 3, '2fedc121fbeb81b8ec5906581a8099d08870c9c8756afb33c4807d0c8d02d2e0'),
-      (425, 3, '5148dfe311e357c023322efc14daf493caeb4a31b4288c37f50c7c5c9f848946'),
-      (426, 3, 'c08fd3a91137c4042ec2fa3a4a0fa014db8b0b562b59ca5581a3d1ae05c9637d'),
-      (427, 3, 'fd76a5d80755024d804f57f0a36b29b2d018f6f603eaec1e2707b0a6042aae2a'),
-      (428, 3, 'c03181c470fb9c62645a84e80aac6c7eeadee39acc5fe7cb3bf1a3272f127b26'),
-      (429, 3, 'faa69e095320518bf89d65d4a6e8889577a20b68bb2994160b2fc0d1c76fdcba'),
-      (430, 3, 'f85f6784ea8d3baf709bcd3f2e99565ef7a667ddc9b8aaeae27cbb1fb9ba5283'),
-      (431, 3, '13c0f4650301225715c89c0d47dd967f971a93dfbbd8fec0af8ec1d254b4bd54'),
-      (432, 3, 'b84d5eb5cdebc51443554ba08ba3edb16428d4f5a26a40e0d2a83b7ac8d3b95f'),
-      (433, 3, '02698f6e6062d16cc0360ef60c45350ad4e81326ae1249d5a881e2b4f195564a'),
-      (434, 3, 'b8a85a6fc6979da11286eb8cbe7235efbfcae6ecae4237aa055a81e9bdc84a3b'),
-      (435, 3, '9fc135a960ad94971f606674c324d8110c86dd8ebae854323c082ed719756447'),
-      (436, 3, '704491e3c7698499a2dea984576b661f894add05ffbf097d66032e89731b1d10'),
-      (437, 3, '93f7eaf20508df00697a95b583351fa6be05d471ac6c55ba5669f2bdb1f21206'),
-      (438, 3, '447a541e634ed65f76fa32ae47f8519006c18ddc658da165861fa956d211b231'),
-      (439, 3, 'd84114a824d06aacef0a96d9a379993f801c2343170a27fcba0bc8df692ba78c'),
-      (440, 3, '52c0b467c7fd34f710cc85b98651b162ebbdb893f6bee2f9a7e59d042216c6a7'),
-      (441, 3, '30e85d5003c36965ebf08ab20e3383bd485c47a992a8a1443cd8b767d000a639'),
-      (442, 3, '8d67f507dfd74e42cf14a15aade3799975f6b7b291fcd1507f37e74a78fd1120'),
-      (443, 3, '9780ec5c024c86dfc142e0b4c482cbe700b0b11617d7ee2a735c7fd45a23ed2d'),
-      (444, 3, 'afb334b348090e1b0aca137440861e0e11e6f01450e098da2222800003e61612'),
-      (445, 3, '377ff155c66880044841116ec313f30cd491d413c45174e12ca2df6bef40da02'),
-      (446, 3, '22b25ad19e5fa87bc943a598acd5e013b5dc68a8aff96f3af0ae173b05246ed7'),
-      (447, 3, '7c087df4594cf29bebd89e7123e20233cf6810509c3d9318fa971663f8cc7dbb'),
-      (448, 3, '8ff8b2396fa3d457ae8a1065000ebf694468cf5edcae906864ce248414715e7b'),
-      (449, 3, '3c502f7640a05db4e88d7d0fb3bf828504eaa3e2d51fb8a89aaf939b724ca5ab'),
-      (450, 3, '2b3199e8bffce8e16d7ed102c9cad630c5a89ed981ed0a0952c0943832a7d4df'),
-      (451, 3, 'f7ff2ac7b21d2c1af3816f3f3089c620f415e3961fe6dff31409ae910cae130f'),
-      (452, 3, '66851c994d39ac3ac75b45d02bb0c7da9edafcd00f61dc4bb11098fe37674e57'),
-      (453, 3, 'd5572e5cfe710fbc38c0fce2277639950b4d98bf186caa8031306cb6f57987ac'),
-      (454, 3, '2d8999f80f11658afe1a747833305a30e15bf8b7f1d2dfba2796f52f1acc5887'),
-      (455, 3, 'bee6f4712747bdf5184a9a3bec935f1d552a39f3afb85d4e78444073b8ed2865'),
-      (456, 3, 'd31da3c5a634d290cf41913fb0f6596a499ba8043f0fdbffa939166d633b117b'),
-      (457, 3, 'e0baf6d57624caaa4bc4fb971d4763393e2da38d6759fa7625c1ee7411f066fb'),
-      (458, 3, '14f697cf42e753cdfe313990bcbd2c369aeb4fe48fc8d65a7a08300819defb78'),
-      (459, 3, 'f4afdbd0da291cb66f5fd859bbbe57382505a045f614719c7f6057b42523e8b9'),
-      (460, 3, '34c7a41dcaeaf977aaab6ca211471163079ef155474aebe7b204eec72ac0aed2'),
-      (461, 3, '81ff109c2e7f8f95e945f57e9b61ed8762295e2df3ee9c02e5d1279608fbf652'),
-      (462, 3, '5407dd18927e57948d5cbd917880cc9676e85333444dc015c381a787fd56db76'),
-      (463, 3, 'b3ac5866327bb106fc711e3c9062e7455eee44d247375f4b7f71bf8aea081dc1'),
-      (464, 3, '87a0a94bdf63d23a2549e5cac1d8b40bb75de1ae771a44a8746e71967082d70e'),
-      (465, 3, '1c0614c66be3d03cff777bdd44601683dfeaa462f7f5968ed908ed6f24785eaa'),
-      (466, 3, '2822a2781da6723a4579d47bb6b64f6b617b80249e9e2ee33c0aa24705b13fd9'),
-      (467, 3, '6a829d7eaf085ab3a469ef998dc868005a8b6ab854ca8ee7a3b413973e845a4d'),
-      (468, 3, '01b61da67b2c68ff6e1e982b1c726ee1b5590bf56247f0b4801e41cbddfc7836'),
-      (469, 3, 'de697dfcc2f16042197c29e9c76ac55ca56c5b2602e051e66bf3189ba4b3adb1'),
-      (470, 3, 'c94006808eaa81e59708733a2b9947f2719a97847ea1b2caaa1f14a246657901'),
-      (471, 3, 'e7c89d3666152843344e9197938a0f37e0f0be0c6b1247a5672dc5480d29d02f'),
-      (472, 3, '260b33116e8a7d6c84f619feef134f0510ef1d0f122c2859aa3bcd60be3c268b'),
-      (473, 3, '01ba9625b5d99f438b9300cec07753df937c8045c947b43eb763627b827d2ed5'),
-      (474, 3, '3c3cf08a31b837d44ce0edeb532ff0e7bcfc4e7291d981bbaf0f82953353e6b9'),
-      (475, 3, 'e7b73588980790cd5c7306345b8ded5d2befa27d7a4b273bc44a675831abb8f3'),
-      (476, 3, '6d423531c2e6042351a258ff18cd16b0dbea670f8d2e69efe9750c544c3cbbb2'),
-      (477, 3, '307e39c37a8e9d160c9c135cc3fe74307336885704ee04e073d2339a3e2cb4f5'),
-      (478, 3, 'a1ce4de6fb095a0e085dbccd245599752fd61ebb79bd218acf3d0c17c80ac18b'),
-      (479, 3, 'e361c95c4f1848eeaf7f69af06dd8cc714d4258984724876e6c0571537822744'),
-      (480, 3, '1d48c36baf399422ffd67c16ac6f52ad38280828a251a4313eecfe89d64e17fc'),
-      (481, 3, '356d10935abcefa49b6574d7f295a05af84f220a8a36e4de97713ead5bb59ef5'),
-      (482, 3, 'dedb1ac84cc1a55383574c89f0e970c12d871b0dc97348703498225523fc998f'),
-      (483, 3, '56435ff9b0124f1da90661b24b7b9b842a8107658b5c2b7277d26d3fbb0888ad'),
-      (484, 3, '0b9086505aa9d0d9345ed4cda2671e0192fa97d435377d43cfd11447f68f15a1'),
-      (485, 3, 'a78ca3b30054249ed945b43ad31a7d202d1f2ec761e0f98697edb1f6802be8f4'),
-      (486, 3, '6f19faba58ffa347270a190ba136ff747ecb8daa7bc284d13efc7e7c6ada3575'),
-      (487, 3, '1f81ae1b5afc68c45aa548fca6ecdb72229c37f7230bc9610b131d1586507284'),
-      (488, 3, '7ff71daa670d5d5790ce550698c40f5d88ae05b5552dff3d5d3c7f403f5634b0'),
-      (489, 3, '28d72c15d08f5e3556e5a298e19eff798cdf1dd0cc23018f1054f8295cf1aeaa'),
-      (490, 3, '60f39d477dc9d153e9467d13d11fe8201e9eb654d889cae2a156458e18a729b8'),
-      (491, 3, '61e2b1a9a073e103a35a16c7d90852a18336fb770f5965f23b77434ddd135fd6'),
-      (492, 3, '697d927284cd1660fe6b8635916a7b0b269a2c127c3e9ff6807b7d4386962b8e'),
-      (493, 3, 'e448c31206a581d8e3ca52732743973b1e3fbfa7b2b4ab909e82408d2e6656d9'),
-      (494, 3, '856790908d0dc39b944748c887d38d403ae33eda5cdf0843b45c05b8247a2d2e'),
-      (495, 3, '2f9766f1aa82b1a0c687083565e0493105645218110df1422119e99be6c76df8'),
-      (496, 3, '2c9858b24f615e5c3034a0395797b620f5a8fc60be7b84e087b60c5600d2358b'),
-      (497, 3, '538f1941d3e6891c3f86e292e089bcb4cbf8c89ac0590f47b6715bcbfbd053c7'),
-      (498, 3, 'c70fdbbea5d129300beba41a567d130667b0d8384d2027091cc3e233b57aa453'),
-      (499, 3, '11e61c3740a8929f29ddfbd6ed50abb5669c75528cd136758a28685b4b8eef0f'),
-    ],
-  },
-  'q_extract_html_pipeline': {
-    153156: [
-      ('https://synth.example.org/doc/0', 'html', 'the fast key order sort table scan merge part window small hash scan join order batch batch batch stream spark window window dup', 128, 3, 1),
-      ('https://synth.example.org/doc/1', 'html', 'spark group query row data slow small filter customer line the batch value merge line table data line join agg line merge slow join sort agg part merge column filter key data a part batch merge data row column column big merge slow part slow spark table small part fast value merge spark row vector join vector customer customer small value order small join spark small filter a the customer filter column fast fast table query window vector', 441, 3, 1),
-      ('https://synth.example.org/doc/10', 'html', 'vector filter stream batch the slow filter column merge slow sort join slow stream row table value window vector row stream column big stream value group scan agg fast small sort line small line fast line line data query big part a slow vector filter key big customer key row value stream hash', 293, 3, 1),
-      ('https://synth.example.org/doc/100', 'html', 'data fast scan part column batch the customer big scan big hash small table order data customer group row query data part hash join scan spark a group group hash batch batch join line join hash filter sort stream sort the column line hash merge big row key sort hash order line the agg query group small merge a stream table sort stream join customer slow big batch row part small value hash a data sort column group group sort query row value small order line big vector scan', 476, 3, 1),
-      ('https://synth.example.org/doc/101', 'html', 'sort big query data group big column scan sort slow order group value the value group batch vector value row slow big the batch small a order vector customer window window join big window small fast sort small a the data order line scan column agg order filter order filter big', 277, 3, 1),
-      ('https://synth.example.org/doc/102', 'html', 'filter hash customer fast filter big spark fast line part value stream small key sort sort fast window window column merge spark filter row group big order scan vector part the order the group customer query a data the filter query big stream vector hash spark spark agg agg window column sort line hash the agg group the hash the the join row column part order part hash small data filter', 389, 3, 1),
-      ('https://synth.example.org/doc/103', 'html', 'window line the join column order line join key window window part batch stream join join filter join slow filter spark stream order filter table batch hash data batch data filter customer a line agg part small customer batch column big merge hash key value key spark part slow stream big fast slow', 298, 3, 1),
-      ('https://synth.example.org/doc/104', 'html', 'hash agg part small query slow customer the group column big a key query hash a vector hash vector data key key fast small customer stream sort table part part line hash window join line customer value agg filter merge hash value agg big filter group customer key key row column fast hash spark table filter join agg vector the merge window fast', 345, 3, 1),
-      ('https://synth.example.org/doc/105', 'html', 'table stream data line small slow join merge table stream sort order order join line join slow table key query scan line order join sort stream sort the batch row scan the slow data sort agg key key row spark query batch scan', 225, 3, 1),
-      ('https://synth.example.org/doc/106', 'html', 'filter line sort hash vector customer vector data agg the group the group slow key the small query join spark small hash window merge part agg slow column merge column value group order order hash big fast a line join row vector join part sort fast join agg value batch order vector key key batch window slow sort batch query spark column merge window column customer hash value vector hash big window join spark the fast order', 427, 3, 1),
-      ('https://synth.example.org/doc/107', 'html', 'slow merge join table query scan value order table row group sort key value group the part value fast key vector slow key column merge agg line column order agg row value key join column join filter slow table scan value filter data part spark join row value slow agg a a key the scan column stream customer big hash line row a', 327, 3, 1),
-      ('https://synth.example.org/doc/108', 'html', 'vector spark small sort column column fast join batch sort slow stream spark spark fast customer table group fast a scan spark merge order table small hash row line row fast key window stream group a query part query stream spark column order line agg scan vector column data hash merge stream window row filter scan key query big column table batch vector filter scan column customer spark filter row value vector small window hash vector batch a scan row query hash hash slow agg column sort the slow slow window agg small query stream the', 541, 3, 1),
-      ('https://synth.example.org/doc/109', 'html', 'hash column order group fast batch hash line customer stream group a filter group join data scan filter table customer column row the the data table batch table spark group small table window slow row vector group window spark window hash slow customer the value customer value agg stream part query group sort small spark vector the fast join join fast data line row stream data slow customer filter line table filter small agg merge column group query hash small vector query filter part batch join row query', 510, 3, 1),
-      ('https://synth.example.org/doc/11', 'html', 'vector key batch order column batch vector table the column hash small scan merge a data big the key table part table a line stream window line row customer vector column big hash vector merge small key value data agg filter agg spark window stream stream fast stream fast spark batch a batch key the column hash hash data join the part stream the group batch line query column order join big spark merge sort value window part merge join order query scan sort spark query', 472, 3, 1),
-      ('https://synth.example.org/doc/110', 'html', 'merge table column a customer scan order customer window join small line batch big slow table filter a column stream window line big filter query row order agg hash part hash window filter scan stream scan merge key data the window hash small window stream column query the merge fast merge scan a agg join hash column fast order value part small group slow spark vector hash line agg hash part data spark group part line column order fast a spark fast order sort vector a table small spark data scan a hash spark', 513, 3, 1),
-      ('https://synth.example.org/doc/111', 'html', 'scan a big fast row a merge big row agg window query small vector big small slow customer key join slow key filter part scan query filter scan spark customer small vector table big scan customer line line vector hash part the customer batch part customer scan column table row order small window the customer key value customer hash stream slow batch query value small table stream value order line value big order sort table order batch spark', 443, 3, 1),
-      ('https://synth.example.org/doc/112', 'html', 'merge slow customer value batch batch spark column slow merge customer small scan big small order column join customer batch fast the query key column filter group filter value the spark order column spark data join data merge join part table the fast data agg the a value part vector query order merge filter group query order scan window query', 345, 3, 1),
-      ('https://synth.example.org/doc/113', 'html', 'merge part filter scan scan small customer slow table the window slow merge filter merge data small query data join sort scan a customer hash agg stream stream table sort batch big value batch row row the customer key spark a window customer hash big agg group fast order value value batch join spark big scan batch stream filter order row scan column group filter sort', 369, 3, 1),
-      ('https://synth.example.org/doc/114', 'html', 'table query row join data batch group scan line agg data value scan data sort dup', 81, 3, 1),
-      ('https://synth.example.org/doc/115', 'html', 'hash table query merge join value join sort part spark a table stream column data window value part window big order data value scan join small vector fast table fast fast', 171, 3, 1),
-      ('https://synth.example.org/doc/116', 'html', 'key a table query a window filter batch filter filter part spark agg batch a sort small column scan value batch hash row hash batch line query sort', 147, 3, 1),
-      ('https://synth.example.org/doc/117', 'html', 'slow scan key group key filter stream vector sort line small customer query fast the filter column spark a column scan window query slow row', 140, 3, 1),
-      ('https://synth.example.org/doc/118', 'html', 'column table column query filter a line sort table the query line slow sort row', 79, 3, 1),
-      ('https://synth.example.org/doc/119', 'html', 'window the big scan query the table fast slow small vector column key data line scan filter row query line agg query column query filter customer sort data small data order fast window big part filter dup', 204, 3, 1),
-      ('https://synth.example.org/doc/12', 'html', 'small big order scan fast sort a value stream fast join column big line value value filter merge data a part filter big line group line agg hash hash query spark sort slow hash order query order sort column small part order the join order hash small data slow group spark window join big stream join the a group table column filter sort merge filter table join key part the sort part join table agg dup dup dup', 410, 3, 1),
-      ('https://synth.example.org/doc/120', 'html', 'small big order scan fast sort a value stream fast join column big line value value filter merge data a part filter big line group line agg hash hash query spark sort slow hash order query order sort column small part order the join order hash small data slow group spark window join big stream join the a group table column filter sort merge filter table join key part the sort part join table agg', 398, 3, 1),
-      ('https://synth.example.org/doc/121', 'html', 'a agg join column small big scan group merge join filter small customer value a spark the value part key big vector batch spark row slow small filter batch spark query group batch batch filter big part big', 205, 3, 1),
-      ('https://synth.example.org/doc/122', 'html', 'line fast the sort customer filter stream batch filter value the', 64, 3, 1),
-      ('https://synth.example.org/doc/123', 'html', 'scan filter order scan order window sort table big window data line scan group merge order key customer part agg a vector data batch customer join query batch the sort hash filter agg customer stream order stream line line vector spark part a a table agg stream stream column small join fast big stream fast the vector small query row line', 339, 3, 1),
-      ('https://synth.example.org/doc/124', 'html', 'scan window key value row group table big filter hash merge a agg query small big the join big part fast scan merge hash agg key group value fast value sort customer a query hash merge table value data stream stream merge value batch table part small slow slow join column merge batch order sort window small filter value slow fast big group batch window value vector data big data table window key data value scan line hash key spark batch', 440, 3, 1),
-      ('https://synth.example.org/doc/125', 'html', 'column vector key a line value window filter merge data small customer line table vector spark join filter window the row small fast table sort spark window big column small fast sort scan slow order key data query window stream spark part a value data filter merge row a key customer join spark line filter filter join table stream customer batch', 347, 3, 1),
-      ('https://synth.example.org/doc/126', 'html', 'spark part spark data batch data filter table query group value slow stream table hash batch stream agg agg column customer data spark join part spark agg order data value a small small row part value merge customer slow line hash window data agg column small data a row value group stream merge value slow filter order agg', 323, 3, 1),
-      ('https://synth.example.org/doc/127', 'html', 'sort batch query slow filter fast join data table customer sort data vector hash column merge group small merge fast spark join filter part vector the row slow', 159, 3, 1),
-      ('https://synth.example.org/doc/128', 'html', 'merge line query agg hash customer batch scan window table sort query slow column agg data row key fast the key batch column row fast the customer customer data batch batch the value data join filter a table window spark join filter stream join value column order the window query the batch query agg merge fast data customer data order window column value key vector filter key line table agg row batch the query query row slow batch table slow customer slow merge slow spark batch value big join batch small vector hash scan stream a filter', 542, 3, 1),
-      ('https://synth.example.org/doc/129', 'html', 'scan filter line a hash sort big slow column a scan hash line join row row order merge query the row key the a table the customer customer sort table key batch scan row join stream line customer merge window the order stream spark vector value fast filter batch filter', 268, 3, 1),
-      ('https://synth.example.org/doc/13', 'html', 'small stream small table spark row group filter a agg slow sort join big big vector scan hash merge stream group small row scan vector a vector sort join key key sort row batch part column fast table query merge table key value the join join scan', 246, 3, 1),
-      ('https://synth.example.org/doc/130', 'html', 'scan data hash group row group column agg part merge value hash row value vector value value the small merge query sort vector agg data fast value window', 153, 3, 1),
-      ('https://synth.example.org/doc/131', 'html', 'vector fast query batch order customer vector query agg stream key window the vector table value scan customer customer merge vector the the stream part line the filter hash key query part agg batch fast part vector row stream merge merge merge slow query key agg order slow spark scan part key group scan order fast', 316, 3, 1),
-      ('https://synth.example.org/doc/132', 'html', 'vector group agg the agg fast value part table merge fast a query fast agg column part row scan big query vector hash stream query row order part big the merge filter slow slow scan batch join batch', 198, 3, 1),
-      ('https://synth.example.org/doc/133', 'html', 'value customer big table order vector stream column vector filter data table slow agg batch column order part small stream row table order group filter table small sort line small merge sort row join row spark the big fast slow column part vector merge a part query vector order stream spark order batch key the fast key line window scan stream row value the batch join vector', 376, 3, 1),
-      ('https://synth.example.org/doc/134', 'html', 'group line stream vector key order spark column vector group small row data stream fast column part table row order window join part batch order window line slow batch join data scan part agg line query vector merge table table order row window key fast group query order group small column batch data row column part fast fast part table key order spark column query row table part slow group small small vector part key agg batch hash join sort scan customer', 460, 3, 1),
-      ('https://synth.example.org/doc/135', 'html', 'hash sort merge merge sort data merge table key stream window spark table merge a spark scan fast order window slow window spark line value slow small data query agg part spark data a key column key batch stream fast customer spark row the window part sort column slow batch line column join part filter window batch scan merge spark value row merge part a line query', 367, 3, 1),
-      ('https://synth.example.org/doc/136', 'html', 'scan spark filter sort filter vector part merge agg hash sort small join window key order column small stream group join customer stream merge slow join the query merge row column agg part scan a order group column big row stream scan join spark group batch value merge key spark value query join batch value table order batch slow part line window column slow filter key row a', 377, 3, 1),
-      ('https://synth.example.org/doc/137', 'html', 'column value table order key customer line group part fast part filter spark hash a key spark row big line vector part table slow fast value slow spark order data group join spark stream customer customer line row scan column small key value slow fast value scan customer data customer filter fast merge merge a a hash big a row column spark the spark sort row part batch group the fast line column data part join part a order filter customer sort stream data key data spark filter filter spark sort small data scan group column', 528, 3, 1),
-      ('https://synth.example.org/doc/138', 'html', 'group agg table row scan group data column slow big scan filter part part customer data line stream line spark the the join agg hash order the data window fast line join line query a value key column spark merge key', 215, 3, 1),
-      ('https://synth.example.org/doc/139', 'html', 'column row join vector spark table query column vector window column query small vector row group stream merge small batch value table fast group part customer scan hash agg scan order sort fast big group window query table order join fast scan table group table batch', 268, 3, 1),
-      ('https://synth.example.org/doc/14', 'html', 'merge key sort column fast value stream fast window merge stream query data column table row query small data table group row window key sort column line slow spark order small customer', 185, 3, 1),
-      ('https://synth.example.org/doc/140', 'html', 'value key customer merge join table sort sort data fast slow big window batch hash fast slow window order stream query', 118, 3, 1),
-      ('https://synth.example.org/doc/141', 'html', 'join value batch row data order window stream agg value window value row query order join column fast the big join order small spark', 132, 3, 1),
-      ('https://synth.example.org/doc/142', 'html', 'part sort window stream line slow window join line data small small order table group window customer agg filter agg a sort sort stream sort data data batch row slow stream column value a fast hash slow small merge group small merge merge small part order query agg batch column customer group hash hash customer order fast part sort scan small merge table data filter stream join key small join customer a filter hash a slow stream filter a hash customer part line small line data table column scan sort group the', 514, 3, 1),
-      ('https://synth.example.org/doc/143', 'html', 'value customer query slow column line order row filter order filter table key order stream fast scan a small value column join agg value agg part query big the merge part a scan part slow window line join join merge batch table table small big customer column column sort value line the query batch query join merge fast filter batch scan window group agg filter filter', 369, 3, 1),
-      ('https://synth.example.org/doc/144', 'html', 'key column line scan join column a vector hash row merge join merge agg fast small part window hash slow the agg filter a filter key stream part line part a order key hash customer column spark vector part slow row value batch slow small value agg data slow batch batch window vector big order fast line spark group table merge part table small fast merge row column line the spark table the sort row agg scan data scan slow customer a slow part big fast stream value slow', 472, 3, 1),
-      ('https://synth.example.org/doc/145', 'html', 'data key slow column merge small a agg fast query order line key sort customer column hash column line vector batch scan value big spark customer the filter scan query hash sort big merge part sort agg small scan agg', 216, 3, 1),
-      ('https://synth.example.org/doc/146', 'html', 'value data a row vector part group group small row data scan order big sort stream scan group query big part window join vector spark table order group spark filter order line slow query column big part scan row the slow key filter vector small a key', 250, 3, 1),
-      ('https://synth.example.org/doc/147', 'html', 'scan small stream data query fast agg small spark sort part scan value vector column hash', 89, 3, 1),
-      ('https://synth.example.org/doc/148', 'html', 'query join table scan hash value scan key agg hash slow table hash slow column value order join group fast column vector value group the merge part line agg column join hash the slow a batch big filter group sort filter customer the order scan a vector window agg table table key row window row batch filter batch column data line window a row small join slow stream vector stream order value agg line stream', 408, 3, 1),
-      ('https://synth.example.org/doc/149', 'html', 'a hash merge key fast order group part part batch vector slow merge agg hash agg spark line merge slow agg data row query stream scan spark filter row merge stream vector the vector scan filter data customer hash window window big scan part join query vector fast spark customer the group query value customer join sort column fast join fast hash vector table big a slow the part fast column join filter small table a fast filter merge spark the group vector big window small sort line join customer key scan order key join join the spark data', 543, 3, 1),
-      ('https://synth.example.org/doc/15', 'html', 'fast column value customer query the sort merge value small window the slow window stream sort slow agg slow sort agg spark table fast scan', 139, 3, 1),
-      ('https://synth.example.org/doc/150', 'html', 'customer spark a small big stream line vector fast window table fast customer slow', 82, 3, 1),
-      ('https://synth.example.org/doc/151', 'html', 'a order table stream big query stream query stream column slow sort the sort table part slow agg stream value agg spark merge join row vector data spark value order vector spark filter part query line value join part spark sort part slow slow sort agg column scan vector spark query line table vector vector small fast vector small row batch order sort query a spark column query group merge join query merge row query sort big row row big key group small join the stream big the batch key customer the window hash a customer group', 531, 3, 1),
-      ('https://synth.example.org/doc/152', 'html', 'group stream data query window row stream small group customer line column data batch window table stream spark stream value table small table line line spark join big vector window vector join the customer the a data small row hash merge merge slow the order join big stream part small sort the agg scan row part column filter part agg fast order small line spark', 364, 3, 1),
-      ('https://synth.example.org/doc/153', 'html', 'agg table group big line query order column window data batch value join customer vector vector part agg data group row sort stream filter the the merge data slow scan stream join small hash small agg order data data query a small column query filter the filter query column filter value merge data data spark value batch agg the column filter sort small the customer table join window the scan agg sort line group hash merge group window vector merge fast data group group key fast big', 486, 3, 1),
-      ('https://synth.example.org/doc/154', 'html', 'merge sort group order a slow window line part the slow merge batch group customer big batch spark fast stream a the spark data query customer window stream customer column table join batch table customer hash key group window the part group window filter column big slow line small order table window data window table vector part line key vector filter column part fast row value row join spark data window sort table filter stream small stream key row column merge big sort agg key hash small part batch order order hash hash order the agg spark query', 554, 3, 1),
-      ('https://synth.example.org/doc/155', 'html', 'scan agg slow spark spark big vector scan big slow agg group query order table window key fast fast', 99, 3, 1),
-      ('https://synth.example.org/doc/156', 'html', 'window scan slow small customer value column query join agg slow stream data sort table row merge sort table key window query fast column part the value sort sort big spark merge table group small slow group a join a column spark scan customer data the the column stream window small key data row slow line key line a table scan hash vector join slow customer row stream group agg scan customer part filter customer query sort', 426, 3, 1),
-      ('https://synth.example.org/doc/157', 'html', 'hash row customer query customer order fast vector column hash stream window order key order customer key batch stream scan sort big scan a a key spark sort data agg fast data scan column stream group key column window sort agg hash column filter group key spark the key vector table batch scan value customer', 309, 3, 1),
-      ('https://synth.example.org/doc/158', 'html', 'order sort row row order spark part line the column join small order scan sort value a window order key order slow stream value window sort key window row customer group stream customer part agg group window scan batch', 218, 3, 1),
-      ('https://synth.example.org/doc/159', 'html', 'column a hash part table stream the window part merge group a stream spark fast merge hash query hash the a filter scan group batch table', 137, 3, 1),
-      ('https://synth.example.org/doc/16', 'html', 'a query vector value merge column agg sort the vector data batch the line hash query customer spark fast query filter slow line a batch fast window window query key agg spark key merge merge spark window slow merge order batch big vector spark window slow stream slow window vector a a order query data column part fast customer scan customer window the hash stream part data batch row line group merge hash data batch group a group agg big merge fast query scan merge vector query dup', 485, 3, 1),
-      ('https://synth.example.org/doc/160', 'html', 'fast small customer table scan sort sort row key scan line the group data window row a merge fast data agg hash vector table window value key customer part join spark spark the a customer sort sort merge sort sort customer data part stream big vector data hash sort hash query join', 281, 3, 1),
-      ('https://synth.example.org/doc/161', 'html', 'key column line scan join column a vector hash row merge join merge agg fast small part window hash slow the agg filter a filter key stream part line part a order key hash customer column spark vector part slow row value batch slow small value agg data slow batch batch window vector big order fast line spark group table merge part table small fast merge row column line the spark table the sort row agg scan data scan slow customer a slow part big fast stream value slow dup', 476, 3, 1),
-      ('https://synth.example.org/doc/162', 'html', 'merge agg the row row group a row slow join filter sort hash hash window agg batch a big merge data merge vector key stream scan fast spark fast stream fast value big the vector line spark merge customer stream agg row row agg table batch a line batch value column query scan spark big order filter agg row order scan agg merge data key scan key filter spark merge the join group join value key big merge sort key order scan part slow data agg row column part spark vector the table key data big join window', 507, 3, 1),
-      ('https://synth.example.org/doc/163', 'html', 'group merge merge table column big scan the customer column vector a merge agg table key join column the sort filter hash agg big agg agg data key spark slow agg scan data row column query', 188, 3, 1),
-      ('https://synth.example.org/doc/164', 'html', 'small join spark batch line vector scan sort customer agg query data batch merge filter vector slow agg', 103, 3, 1),
-      ('https://synth.example.org/doc/165', 'html', 'table column value customer value batch window customer slow order window filter sort part column key spark sort sort a stream big batch', 136, 3, 1),
-      ('https://synth.example.org/doc/166', 'html', 'part merge agg agg fast big column key customer sort table order big customer value vector the filter table table big agg scan part part group vector batch customer join fast scan window order table scan key stream batch table key batch data hash spark vector the the hash agg batch column the scan', 298, 3, 1),
-      ('https://synth.example.org/doc/167', 'html', 'value window part window scan value small order order merge hash filter order row row customer stream spark key data sort hash vector row customer big sort small order customer small row spark group stream small part order', 222, 3, 1),
-      ('https://synth.example.org/doc/168', 'html', 'key vector window hash row filter group hash join agg vector fast column small part key hash table vector fast order vector stream customer column key join big sort part slow column small table vector order join group batch column join table column query big filter join hash join filter sort data column big query sort hash small row hash agg merge filter key merge merge spark scan spark customer big row join batch big small value line table the order column group table a slow order order small data a part agg small row the a table', 536, 3, 1),
-      ('https://synth.example.org/doc/169', 'html', 'hash hash agg group merge join column filter a join slow scan part', 66, 3, 1),
-      ('https://synth.example.org/doc/17', 'html', 'query scan slow sort group part a order order line column hash key group column hash the vector table batch filter merge agg query column key part filter small stream spark table hash window value big sort order sort filter fast the line agg customer a batch window sort scan window window slow line query spark a data table agg key stream', 339, 3, 1),
-      ('https://synth.example.org/doc/170', 'html', 'join query key agg table table slow order join line line small stream window scan scan scan value group agg the order scan value query scan customer big vector vector part key line group row order value value', 208, 3, 1),
-      ('https://synth.example.org/doc/171', 'html', 'scan key group fast column stream order order query row key stream part line customer order a group', 99, 3, 1),
-      ('https://synth.example.org/doc/172', 'html', 'window table line batch order agg sort data sort slow join part filter big a spark customer slow fast spark query query spark batch window stream fast column column hash value part customer query big sort big group order filter vector table window data part data value slow order order slow order key query data part row window group customer merge column a sort big', 366, 3, 1),
-      ('https://synth.example.org/doc/173', 'html', 'table sort hash query hash slow part slow value line key the agg agg scan customer spark a data query group the customer value query order data line small value table data query a scan window filter line fast line', 213, 3, 1),
-      ('https://synth.example.org/doc/174', 'html', 'merge customer join spark scan stream merge agg sort hash row big value agg line order table data slow hash vector table table hash the key group slow spark spark key sort row key column join scan hash group join customer batch line filter small hash hash small customer customer customer value part value data order order order data sort row window data data filter the the spark table sort query data line spark fast value the window spark group vector slow order batch value', 477, 3, 1),
-      ('https://synth.example.org/doc/175', 'html', 'slow data slow agg line slow stream small agg line batch join merge batch part big hash part fast merge agg part key vector scan table customer the value small data filter merge query order the agg stream agg row fast hash vector stream line vector stream batch fast data stream the key hash batch row scan key sort the customer value group the part slow fast vector join part small merge vector group key column column a customer hash window a filter a agg window sort the', 473, 3, 1),
-      ('https://synth.example.org/doc/176', 'html', 'group query part batch spark slow batch slow spark group small sort table customer query small line sort order column a filter a vector window the stream key vector group a window join stream order line sort line window group group query small group merge order fast vector merge window the scan data spark hash batch sort batch join vector data slow group hash key column window part key data key big slow row key value spark query query big part group merge group column order fast a dup', 489, 3, 1),
-      ('https://synth.example.org/doc/177', 'html', 'key data a the value table column join customer a line row column customer a merge data key a spark agg sort sort big vector merge join batch big', 145, 3, 1),
-      ('https://synth.example.org/doc/178', 'html', 'scan merge window join key vector join merge query value window join stream row scan key key window hash merge value big big batch value a', 138, 3, 1),
-      ('https://synth.example.org/doc/179', 'html', 'customer fast part the small column scan fast the agg merge line order order group order table order row small small batch key small order slow key data column line scan join column agg key stream part filter batch small filter window join column scan window group vector scan scan a row line scan join hash spark line filter fast key the line column column small sort small line join batch part key group join group sort big sort filter order sort slow customer data customer window scan', 488, 3, 1),
-      ('https://synth.example.org/doc/18', 'html', 'order row table order line part row batch column group spark value table sort key a hash row row window filter group small key value data slow scan merge a key value sort', 170, 3, 1),
-      ('https://synth.example.org/doc/180', 'html', 'merge spark part fast value sort data customer scan key stream value group fast fast part the group data part window order stream data', 134, 3, 1),
-      ('https://synth.example.org/doc/181', 'html', 'line the group the spark agg the table join sort data group agg group row batch key merge window sort agg value a key batch vector group table sort', 147, 3, 1),
-      ('https://synth.example.org/doc/182', 'html', 'join column value small sort big agg slow hash agg stream small agg table a query agg data stream key scan part query key', 121, 3, 1),
-      ('https://synth.example.org/doc/183', 'html', 'small scan value slow key scan customer order big scan scan agg a part table a scan column value key data table customer line key data filter column value scan table big filter table a data spark spark filter fast', 213, 3, 1),
-      ('https://synth.example.org/doc/184', 'html', 'key group stream row stream order data slow batch sort line table merge merge slow query line batch row fast vector spark spark scan column spark table column row line a customer merge data data line line stream fast slow part sort merge a a vector a slow vector slow spark filter table spark order order sort batch small big batch filter fast small batch order slow group', 372, 3, 1),
-      ('https://synth.example.org/doc/185', 'html', 'agg vector join column small column agg query a value merge vector the table batch vector window column table data query small line hash window slow fast window vector vector query window filter window query customer sort customer', 230, 3, 1),
-      ('https://synth.example.org/doc/186', 'html', 'spark vector slow scan fast merge big table group batch order the slow scan vector batch row group scan data key filter scan batch small part line order query slow hash scan a sort window scan fast row query filter scan group filter sort slow table data sort a row customer line sort group big column row customer column query key part data spark hash spark', 357, 3, 1),
-      ('https://synth.example.org/doc/187', 'html', 'a slow line column line data agg key big agg vector line key batch join part a stream scan a the hash customer a a vector line agg line value vector value sort the part spark slow fast big row group key stream line fast customer sort stream the column query table small query agg group data small row join vector sort slow key sort batch small fast data window a window batch window line', 387, 3, 1),
-      ('https://synth.example.org/doc/188', 'html', 'vector small customer value the query query spark table merge scan spark the value batch stream merge part data data slow a value column spark slow order customer customer slow row agg column window vector part customer a key query fast column sort query', 254, 3, 1),
-      ('https://synth.example.org/doc/189', 'html', 'small filter filter vector small customer window key order big spark filter stream agg column query slow table agg table query vector query key agg small table window group customer group join data the value vector window join key spark agg query spark value big order a sort big the scan slow vector agg small a group window row data slow key the sort key vector slow customer join small key slow sort window agg part order filter sort the value column row row vector batch part join the the scan join table', 508, 3, 1),
-      ('https://synth.example.org/doc/19', 'html', 'stream join group column order agg part stream batch slow customer merge group window a slow sort customer agg part group the vector batch line group small fast order sort group a table order batch filter row query column batch spark big merge line column query', 261, 3, 1),
-      ('https://synth.example.org/doc/190', 'html', 'table table fast filter spark merge slow fast filter sort big big value small value key query group merge table scan part data big window fast agg big column fast batch slow vector value key a table row stream small sort a slow a hash small sort merge column slow batch line agg window part hash column key window part spark merge spark the agg line join agg stream vector batch big row big merge table big window batch merge scan stream hash spark group row merge row', 468, 3, 1),
-      ('https://synth.example.org/doc/191', 'html', 'join sort a spark order merge row column line agg data scan key hash table window', 81, 3, 1),
-      ('https://synth.example.org/doc/192', 'html', 'stream batch a customer slow stream query agg hash small vector stream scan slow column vector window stream small value customer stream filter value join join column window slow line stream filter order key value join fast line slow slow a key filter filter batch column value window agg table part filter group key key table customer the batch window small big join order query table vector order line merge key line key small a row filter agg key batch hash window sort slow sort order merge fast column query scan slow small slow', 533, 3, 1),
-      ('https://synth.example.org/doc/193', 'html', 'small part filter value group part customer line big hash order order scan merge small slow query big group spark hash slow', 123, 3, 1),
-      ('https://synth.example.org/doc/194', 'html', 'scan order order join spark value window line value group join scan order filter stream filter the batch column value query fast key hash window order data sort sort scan window scan line a stream spark the scan spark slow order row data query table column row table order the batch key scan slow customer window scan', 317, 3, 1),
-      ('https://synth.example.org/doc/195', 'html', 'line customer scan column query stream line sort stream data group the row stream scan a value query window small the agg value part query small stream column window window spark a agg group data line spark stream small part group small scan big agg fast query table stream spark line group agg window agg join hash join fast hash table', 336, 3, 1),
-      ('https://synth.example.org/doc/196', 'html', 'scan filter a filter customer table batch merge slow fast stream sort merge customer the spark agg batch spark a filter customer join small key sort data fast row stream table fast spark vector merge filter agg fast stream the part small query part agg merge query agg scan part', 278, 3, 1),
-      ('https://synth.example.org/doc/197', 'html', 'hash column scan column vector order query hash big column value the window slow hash customer window line batch row agg table row slow merge merge fast slow big query stream data agg the query filter window query merge a query hash sort sort vector stream customer sort group batch vector big fast hash batch value spark hash group a the spark line vector key stream sort hash the batch the stream scan filter spark key group slow merge line filter fast fast', 459, 3, 1),
-      ('https://synth.example.org/doc/198', 'html', 'customer a order order filter query part value join merge row row data table scan data window scan filter slow fast vector scan customer the filter join stream stream a order table vector scan query merge batch a hash slow join value the fast key data window scan filter', 270, 3, 1),
-      ('https://synth.example.org/doc/199', 'html', 'join spark order table slow fast fast column vector line join group agg vector value value a batch agg table window column line merge a sort window stream query column group part the spark row scan key vector sort sort data scan row filter column slow stream order merge big data the key merge fast', 298, 3, 1),
-      ('https://synth.example.org/doc/2', 'html', 'join a filter window row join stream customer data group sort merge fast row key stream big slow sort small table sort filter agg the a small stream big join data line group row line key query line vector window batch agg small a value fast hash merge fast table small small spark join group order big hash query vector batch spark join vector part', 348, 3, 1),
-      ('https://synth.example.org/doc/20', 'html', 'slow hash window fast query query slow agg merge row a line a order agg small group spark table part row customer join filter merge window batch a data filter line customer big data group sort window key row group window row batch line big filter sort row line line small batch big line fast the batch order', 307, 3, 1),
-      ('https://synth.example.org/doc/200', 'html', 'hash the join column the query column stream hash value merge spark a key part order window stream vector hash fast small customer order table fast customer window order scan stream batch vector column customer key part batch column stream customer customer hash column table filter part batch filter line filter scan filter spark fast the window row batch', 356, 3, 1),
-      ('https://synth.example.org/doc/201', 'html', 'line batch a line line the spark part table column table the stream part part filter the scan slow customer group table scan spark row big join key window window scan query hash window batch line sort line join data vector slow table spark spark batch row slow small slow data stream filter agg spark small big query key join merge fast agg line small agg', 355, 3, 1),
-      ('https://synth.example.org/doc/202', 'html', 'group line order a sort spark agg join hash key', 47, 3, 1),
-      ('https://synth.example.org/doc/203', 'html', 'group group line window key vector merge order query group line batch stream column line big group merge sort spark part value slow line query stream value value value row data agg window order join a small spark join join hash fast', 232, 3, 1),
-      ('https://synth.example.org/doc/204', 'html', 'sort join filter group line spark part data query key order the agg sort order customer join data table join customer batch join batch batch a window small table part scan the sort data stream join scan agg line line part stream part column table part big big line column fast table customer a window fast spark fast group value table line join line fast fast fast line window key sort hash part stream merge table line key key column agg row filter column row merge merge merge query spark filter window a stream a', 515, 3, 1),
-      ('https://synth.example.org/doc/205', 'html', 'query hash row small big small window customer data key order filter slow stream customer the part vector vector agg slow column query query scan batch group data group filter the group merge scan key row group sort customer filter merge customer', 246, 3, 1),
-      ('https://synth.example.org/doc/206', 'html', 'filter part spark a stream key query merge sort window part window spark batch data slow spark a hash part merge key key spark window group join line fast column batch a big group row filter spark row scan merge sort scan filter merge group value customer value data join order big scan the spark window agg window fast column join join merge stream', 349, 3, 1),
-      ('https://synth.example.org/doc/207', 'html', 'join query column small customer data table window stream fast value slow hash scan join fast key big filter small sort value agg query small sort agg a window filter join stream line order big the group slow group line data value key', 234, 3, 1),
-      ('https://synth.example.org/doc/208', 'html', 'customer window slow batch batch slow big big line query order vector vector hash column row slow stream group line part vector part data customer vector hash query the order batch key table the filter key part a slow sort spark sort batch a a vector line spark table vector vector column merge merge key value the hash agg column a stream big merge column column join fast part fast part vector key merge sort table order data query small sort the line slow line filter the filter column key merge window the key', 513, 3, 1),
-      ('https://synth.example.org/doc/209', 'html', 'big column value big scan big part filter a row key customer scan query table vector row hash fast sort the data window slow vector spark part agg batch vector part row table batch join merge key merge join key row fast window sort column column spark table', 257, 3, 1),
-      ('https://synth.example.org/doc/21', 'html', 'customer filter key table stream batch group group data vector order query part spark slow join window the the agg value customer the row part order stream scan agg merge the data merge key hash customer key big query customer vector line big a sort data spark row part batch scan key part scan row sort sort key order big scan value stream part stream small line fast agg the row join merge value group small big a sort column key value fast scan filter window value window scan', 479, 3, 1),
-      ('https://synth.example.org/doc/210', 'html', 'vector a merge filter window vector window join row key value small filter scan agg order small column small batch the value row table line window big vector join merge query customer big line query line order big data fast row line scan data merge line hash join vector join join merge window row merge group column value window', 329, 3, 1),
-      ('https://synth.example.org/doc/211', 'html', 'line row row customer value merge spark big customer column join a table a fast vector fast a vector value agg spark group query sort data a scan agg small join value customer hash the small key small window part filter sort slow column the column window query filter line agg small group scan a data row column data part order window join stream sort small', 357, 3, 1),
-      ('https://synth.example.org/doc/212', 'html', 'value vector query stream a scan row value line column group value agg stream column agg column line row batch table customer vector hash query small order query join group order key filter join key fast column data join vector query agg table vector big table key window agg join part filter row query big window stream big fast batch sort sort customer group a big hash filter window a big row sort spark line value table filter batch', 436, 3, 1),
-      ('https://synth.example.org/doc/213', 'html', 'join the query big data join a spark order group agg agg stream scan line join join hash column agg batch vector the value hash key row query value big customer column hash sort hash hash scan order row merge line slow a spark scan customer row part key scan the order key stream table group column fast agg fast query big query value window vector group spark the query', 370, 3, 1),
-      ('https://synth.example.org/doc/214', 'html', 'spark query group column batch filter part small window merge window data value line value stream data a table order agg stream part data scan a part join merge merge vector column group group part slow scan filter big value spark value join customer table a window hash customer hash agg hash merge window batch the vector the hash stream value slow batch window window value big key slow batch join hash group hash data slow value join scan scan data slow value big table merge query customer vector scan', 506, 3, 1),
-      ('https://synth.example.org/doc/215', 'html', 'filter the vector filter column data small scan customer stream window line key data data spark batch a part window key fast part slow small group query join column a big agg hash batch query customer merge a part stream part stream fast query big part batch vector order value key fast query scan slow sort merge agg column data customer join merge scan stream table batch hash value the', 388, 3, 1),
-      ('https://synth.example.org/doc/216', 'html', 'row vector sort row sort fast window merge slow data table filter slow window small a order small scan vector table window sort the big window slow stream join line agg stream data group part sort scan scan window batch stream', 226, 3, 1),
-      ('https://synth.example.org/doc/217', 'html', 'agg value batch query agg big part line table column a big value merge row value the table query order customer data table query slow big data data fast table table the order the order customer filter hash table group row value query group small window table data column table hash column batch scan data data hash column order sort column stream row order merge group a line stream part window', 394, 3, 1),
-      ('https://synth.example.org/doc/218', 'html', 'part table join table column hash the big part big vector part data order scan spark hash stream column line line key batch fast customer value part value line big slow stream stream query vector query batch scan small a vector scan small group stream filter line order part value stream scan merge agg agg stream a batch data join join row batch customer value big vector batch filter vector column slow data big vector part a a agg sort group merge data fast group a value big row query customer line a stream column group key value', 534, 3, 1),
-      ('https://synth.example.org/doc/219', 'html', 'scan line filter window group column spark line key slow a customer hash query agg sort filter stream customer customer window customer batch the column agg column sort spark agg merge fast small order value key small row line group line value vector the merge batch spark', 272, 3, 1),
-      ('https://synth.example.org/doc/22', 'html', 'hash a row filter column table order scan a customer value value big batch stream column part window key fast small sort batch column customer order key data sort hash line sort scan join join line vector customer fast part stream table hash sort group join scan the group fast the a hash sort row small query small the spark group query column sort small the table query hash agg hash join filter fast line spark part filter join key query agg a join key group a', 463, 3, 1),
-      ('https://synth.example.org/doc/220', 'html', 'row customer merge customer table customer fast part filter row small sort big order column part a line line customer join fast the order stream scan agg table row join small column filter spark order the hash stream hash filter a data value order value column stream filter filter table order fast scan a data order customer small merge row', 341, 3, 1),
-      ('https://synth.example.org/doc/221', 'html', 'join table window a customer filter slow fast sort vector query join scan', 73, 3, 1),
-      ('https://synth.example.org/doc/222', 'html', 'value the query line slow the fast data sort batch small row big customer query window order agg line merge table customer stream value customer line window row query key merge row table query join window group customer window agg window window', 244, 3, 1),
-      ('https://synth.example.org/doc/223', 'html', 'group order order line data small batch line column sort data filter a the scan agg fast table line big order fast fast query table a hash key value sort value customer agg slow customer merge value fast sort group slow sort window stream agg vector stream hash big row window a customer part hash table group value fast line a the batch sort customer customer line batch key part customer part fast data window line batch window line filter fast query fast scan merge hash', 473, 3, 1),
-      ('https://synth.example.org/doc/224', 'html', 'hash line row sort window sort data scan order fast small column big small value stream the line scan order filter slow join small merge data sort agg window part small sort hash window query fast data order stream part value merge join table sort filter row order the window vector join line batch key table stream sort', 320, 3, 1),
-      ('https://synth.example.org/doc/225', 'html', 'line query table key window order query order spark stream order column agg batch customer row small table query value key hash data merge join vector order', 156, 3, 1),
-      ('https://synth.example.org/doc/226', 'html', 'column vector hash spark query slow table filter agg data vector scan spark a window a a fast query column table value line big the stream scan slow part slow part vector row line data agg a big part small fast agg fast group line', 230, 3, 1),
-      ('https://synth.example.org/doc/227', 'html', 'order line big slow key column order sort big merge vector vector customer row table scan part line slow merge key window vector vector stream scan customer filter window customer line group data filter column slow spark fast slow line customer big stream agg small scan a a merge part fast batch hash big spark row slow customer slow row table query hash batch value vector the small filter table data row big group agg column sort part line data row', 451, 3, 1),
-      ('https://synth.example.org/doc/228', 'html', 'order spark stream part batch table query part a merge column row order filter merge table the fast agg vector order spark small stream a part query fast batch big big join stream batch', 185, 3, 1),
-      ('https://synth.example.org/doc/229', 'html', 'scan data column vector stream small customer merge hash group big big value agg vector join hash window filter the big row hash key', 132, 3, 1),
-      ('https://synth.example.org/doc/23', 'html', 'filter hash big small a window a row spark vector key sort batch value key window agg window query data row table small table fast value row vector vector big a sort line filter scan the table line join merge stream merge query hash row value table group join filter value spark', 278, 3, 1),
-      ('https://synth.example.org/doc/230', 'html', 'spark scan batch batch big slow row column slow agg group sort vector value row table slow big part the stream agg spark order vector window vector the window key the big the join column line stream key order merge key line key spark value customer slow group batch window a query table hash hash join query group a data query group line data fast group value a part join', 371, 3, 1),
-      ('https://synth.example.org/doc/231', 'html', 'fast batch scan batch part data sort scan join key fast batch a data customer agg filter agg batch filter column merge slow spark slow window part the stream query slow query data row join table value spark row agg customer sort small sort join key line sort scan merge fast line small big batch agg', 299, 3, 1),
-      ('https://synth.example.org/doc/232', 'html', 'order fast a window part hash customer a join join scan value batch fast table value fast agg data data small scan spark part row hash a sort batch vector join join stream key window table stream agg value scan row batch vector stream part query part filter row order key order fast merge customer merge spark small order join fast query batch value data order data vector the', 376, 3, 1),
-      ('https://synth.example.org/doc/233', 'html', 'a hash batch merge table customer row batch a table batch sort query filter sort stream agg spark group big big column', 118, 3, 1),
-      ('https://synth.example.org/doc/234', 'html', 'window join a slow table slow hash stream slow order vector sort sort row row scan table the small table value customer filter part scan data query line fast row spark batch window table query line sort merge agg table hash a part row hash stream a key customer stream order merge big agg row slow the filter order spark fast small slow group customer batch table big stream column slow customer sort part stream window data window stream fast', 443, 3, 1),
-      ('https://synth.example.org/doc/235', 'html', 'a agg vector query spark big value vector customer value line sort row join agg part window part data hash table small sort batch sort merge key small window agg spark customer group batch row data column row order group fast vector vector agg fast part row big vector batch agg key hash line group a join column vector fast filter query filter filter vector scan a the scan table hash line a sort join group', 408, 3, 1),
-      ('https://synth.example.org/doc/236', 'html', 'row group filter join key vector row value slow join part small stream part a customer big row hash a slow column customer data the small window value filter sort sort stream customer spark join small', 200, 3, 1),
-      ('https://synth.example.org/doc/237', 'html', 'data query part small filter agg hash customer big stream query data scan scan window hash small small key filter customer part sort merge vector table hash join column the spark key order order scan table', 205, 3, 1),
-      ('https://synth.example.org/doc/238', 'html', 'data filter join order fast scan join stream join sort customer key merge slow a batch column query big column hash key batch key window key table vector big spark merge value key join vector key column big value window slow data order window sort scan batch agg query part hash part join', 288, 3, 1),
-      ('https://synth.example.org/doc/239', 'html', 'big customer scan sort filter hash small query batch scan key column window batch row the sort batch query the data table join filter filter fast value vector query', 164, 3, 1),
-      ('https://synth.example.org/doc/24', 'html', 'row batch line big part merge column small part value order a group sort line key merge small value agg join scan merge row the table batch row window row a scan customer sort key small group row window slow join key column customer part line row hash spark agg line spark fast a filter agg fast line order key', 310, 3, 1),
-      ('https://synth.example.org/doc/240', 'html', 'agg customer part fast key join slow row merge window batch group filter column stream group stream join data column order spark column the column line window window query key column agg group big scan the hash filter agg key order filter part the filter group the agg line vector window window part group agg vector merge join stream order column customer hash customer key spark column vector a group data customer small sort join batch the small agg order part the table', 473, 3, 1),
-      ('https://synth.example.org/doc/241', 'html', 'query big value order scan hash agg stream scan a batch batch customer small batch data join merge data scan part agg join part big small vector fast column order batch query fast value row query data sort a customer value batch fast fast order join merge table agg customer stream big row hash', 294, 3, 1),
-      ('https://synth.example.org/doc/242', 'html', 'vector scan customer a stream hash group a key big spark vector batch line window group sort filter big the small customer column merge small line group scan part table spark small order a window column sort query value column window fast vector fast key big hash batch merge the stream spark customer the column hash customer vector spark group scan value order merge the group join fast customer spark group spark table sort table a hash agg query order stream table vector hash scan vector filter filter small stream a hash', 526, 3, 1),
-      ('https://synth.example.org/doc/243', 'html', 'hash the table group customer spark stream column customer a sort the order query sort key customer part slow row merge row data scan row join part column slow line hash line fast sort join scan batch row agg column slow part merge table part value the query sort big agg table part order row slow query scan hash column part value data slow data data small big value customer hash line key value window slow order a key merge row window order group order agg vector table a hash table batch query data', 502, 3, 1),
-      ('https://synth.example.org/doc/244', 'html', 'fast vector small window sort slow column row key join group join big batch table column a slow customer value data join small a sort table customer small key merge vector batch scan order order key filter vector query', 218, 3, 1),
-      ('https://synth.example.org/doc/245', 'html', 'filter scan row value part table part hash fast agg sort the value window query filter batch stream line slow window column big query big spark table group spark vector hash slow agg hash hash big order the big stream value filter value a group vector spark fast sort a join customer batch agg window customer table line batch spark group window the value batch data spark slow part table customer value table key a line spark merge part hash row key scan order', 461, 3, 1),
-      ('https://synth.example.org/doc/246', 'html', 'big merge merge stream scan slow join column spark hash group hash line the value agg order order big stream column vector spark the join customer a value sort query vector agg data data merge slow row value row hash stream line agg merge slow group row the query hash customer vector a merge filter slow line table part spark vector window query row hash line fast batch part the merge fast query filter', 404, 3, 1),
-      ('https://synth.example.org/doc/247', 'html', 'row batch join group a group table slow a big data merge column row value small small small batch filter customer order key group group order part scan query group row sort order column filter sort group merge fast table slow line merge', 236, 3, 1),
-      ('https://synth.example.org/doc/248', 'html', 'batch data scan big fast group big order column line line spark data column sort agg merge fast row data order scan slow customer hash batch scan part a batch value agg join vector group key merge slow join part table scan row batch sort column row column a column a customer window vector a row line spark row a order filter scan filter sort spark the spark group fast hash hash spark customer line customer merge fast order group data batch scan part part window slow key join small', 484, 3, 1),
-      ('https://synth.example.org/doc/249', 'html', 'spark small small column customer agg spark small filter hash hash data vector line filter merge slow slow table row order big table the scan query merge a data value big data query vector small line stream value merge fast hash vector window merge slow filter group small join window customer join data data a window sort fast customer sort join column spark fast stream agg line fast key line a part a key group table hash window agg scan slow', 445, 3, 1),
-      ('https://synth.example.org/doc/25', 'html', 'row order customer sort agg fast sort part stream vector vector sort window sort hash group vector agg line a scan group agg part scan key spark the merge line merge query', 171, 3, 1),
-      ('https://synth.example.org/doc/250', 'html', 'window the key group fast the slow window slow data stream row sort batch line query order query a column fast merge part hash window small slow table big filter big part data line spark column', 193, 3, 1),
-      ('https://synth.example.org/doc/251', 'html', 'a table the filter value scan key fast window customer data key small batch group value key small window small a join slow column agg filter row fast hash batch query join sort part spark table join fast window value a part order query stream agg a big fast a group customer big line fast scan table spark vector group slow a', 325, 3, 1),
-      ('https://synth.example.org/doc/252', 'html', 'scan column row filter part key slow scan line part part batch fast part slow fast group customer hash vector part value column table group small window query stream key filter group batch a the agg join sort part part row hash filter stream table join customer data column fast part hash line hash part fast value sort spark the line data big small vector data merge row group row row customer stream group the group query line filter row slow filter window data spark big the small scan sort the scan fast stream part fast line spark', 535, 3, 1),
-      ('https://synth.example.org/doc/253', 'html', 'merge batch small customer group batch vector window agg vector part small column hash merge value value stream scan group scan order group column part sort sort hash batch batch value key spark part scan vector filter batch scan slow data small small window slow big key join sort spark', 287, 3, 1),
-      ('https://synth.example.org/doc/254', 'html', 'vector hash group sort row order agg filter customer value query table a table stream small query data batch slow scan window value customer row part agg big hash spark stream', 175, 3, 1),
-      ('https://synth.example.org/doc/255', 'html', 'filter merge agg scan value window join big order customer sort a part part the merge batch row row query filter part small row window fast merge key merge merge column vector vector agg data spark stream agg hash query column agg sort part a merge customer a', 259, 3, 1),
-      ('https://synth.example.org/doc/256', 'html', 'query window query query customer the join customer the group key part agg line small', 85, 3, 1),
-      ('https://synth.example.org/doc/257', 'html', 'scan window data filter scan sort slow order spark batch sort small column spark filter value the data agg small window', 119, 3, 1),
-      ('https://synth.example.org/doc/258', 'html', 'part filter the hash a scan scan row row row small spark vector value group order spark data order key group table hash scan row stream group merge value batch big window query order big column fast scan agg line agg', 216, 3, 1),
-      ('https://synth.example.org/doc/259', 'html', 'sort scan merge column hash query filter window value the group merge small the stream the spark batch line big the table group order sort customer value group data spark vector hash slow batch agg part batch filter sort line part sort small row merge part vector column big filter key sort customer part agg sort hash stream spark order slow filter agg filter merge line big the stream filter value row table a filter data column spark filter join batch merge slow vector customer filter scan', 493, 3, 1),
-      ('https://synth.example.org/doc/26', 'html', 'group query part batch spark slow batch slow spark group small sort table customer query small line sort order column a filter a vector window the stream key vector group a window join stream order line sort line window group group query small group merge order fast vector merge window the scan data spark hash batch sort batch join vector data slow group hash key column window part key data key big slow row key value spark query query big part group merge group column order fast a', 485, 3, 1),
-      ('https://synth.example.org/doc/260', 'html', 'agg the window column the fast stream key merge key query window a batch sort value hash hash agg part key column sort order sort row slow agg big line column order a stream big the filter agg scan slow agg column filter group agg customer sort slow row spark batch row stream column table row column value stream order vector the agg join vector group hash query the a line vector filter group data join window customer hash hash stream customer key agg key scan the group agg table', 483, 3, 1),
-      ('https://synth.example.org/doc/261', 'html', 'window stream window query filter row slow slow small small agg window the vector order key hash batch agg group join query filter column the key part vector vector stream data query slow slow filter query line part join table fast fast slow merge hash vector value spark order key value join group row table fast vector a key stream key a join hash order stream the line join merge hash small small spark filter merge filter row spark order order query column filter value sort big column the batch vector stream small', 519, 3, 1),
-      ('https://synth.example.org/doc/262', 'html', 'table hash line part row a group fast row big fast vector agg agg sort line small fast line stream small window sort order batch value hash agg table row merge key agg agg query filter order slow part part big customer', 218, 3, 1),
-      ('https://synth.example.org/doc/263', 'html', 'scan data column vector stream small customer merge hash group big big value agg vector join hash window filter the big row hash key dup', 136, 3, 1),
-      ('https://synth.example.org/doc/264', 'html', 'line stream hash order row query spark join small row table stream agg window table stream stream scan agg fast customer the slow scan join window small window key slow part filter value scan small window query batch a line small slow merge a group the filter group vector order big join stream slow key hash stream batch spark slow order', 338, 3, 1),
-      ('https://synth.example.org/doc/265', 'html', 'customer value column line column window agg spark table join small merge the join key order scan the part customer stream sort spark group big the query vector the scan big column small table hash merge window filter part slow filter agg vector', 245, 3, 1),
-      ('https://synth.example.org/doc/266', 'html', 'agg line table window value table a scan big filter agg slow filter merge vector line stream table a the order customer key column sort', 135, 3, 1),
-      ('https://synth.example.org/doc/267', 'html', 'column line filter part the sort key batch filter small key scan a the value key agg big column fast hash group order table slow customer scan value vector big stream part hash table spark a window hash fast row spark line customer filter big customer group slow group agg order line join value join sort sort query table query value big table batch value slow big batch part spark agg data sort a order order data small line value scan line window customer data merge value scan row join spark scan column big line slow table', 526, 3, 1),
-      ('https://synth.example.org/doc/268', 'html', 'a stream part batch scan batch scan sort slow the batch customer customer stream spark join value row value the customer big data spark a agg batch hash query part line query join line filter order group join column join small vector window data small spark sort table agg sort customer customer join a column a join a fast agg filter vector hash vector customer big group customer value data part agg window batch window row merge column small scan merge join the row small query hash window order batch big slow big filter stream slow customer stream', 552, 3, 1),
-      ('https://synth.example.org/doc/269', 'html', 'window stream slow query window scan customer scan group row scan filter data data slow order batch join table a sort key data batch fast window scan the value column vector key value line a big part stream batch batch batch vector part sort window hash big a agg merge merge group filter a the scan key customer line customer batch vector', 339, 3, 1),
-      ('https://synth.example.org/doc/27', 'html', 'table join spark line scan merge batch small table key', 54, 3, 1),
-      ('https://synth.example.org/doc/270', 'html', 'column vector small agg a merge row table window column fast scan batch row spark order group batch key key query merge slow scan join query order order stream join row the small slow order query spark window part join batch column agg batch order vector join hash big fast batch order big line big order scan small query line hash spark spark big table small a vector hash sort row hash table key fast merge key fast vector row part the agg batch a dup', 453, 3, 1),
-      ('https://synth.example.org/doc/271', 'html', 'a filter big group column join stream data group group group row data data the data spark join scan hash big group merge table scan scan spark hash row hash column vector a value spark group', 190, 3, 1),
-      ('https://synth.example.org/doc/272', 'html', 'fast hash window column spark filter vector stream window slow a big vector group row hash a part join group spark vector merge group spark data window spark query merge agg window customer row order agg vector value column join row sort filter key customer row line sort fast row fast table key a agg line merge data group value join the part data small order order scan stream the join vector key row order fast table query small a table filter a', 448, 3, 1),
-      ('https://synth.example.org/doc/273', 'html', 'the slow small part customer join vector batch part hash row hash slow merge batch vector join merge key query column customer', 126, 3, 1),
-      ('https://synth.example.org/doc/274', 'html', 'slow fast join stream row row filter sort stream row row hash window join line sort filter hash batch big stream data key column a window agg agg small big part small key a key spark merge order join the filter the table customer filter line stream the order customer window big filter group a scan order batch spark group big vector join data window the fast merge customer merge data big row table a query key small value customer column customer vector big batch stream filter stream join slow', 496, 3, 1),
-      ('https://synth.example.org/doc/275', 'html', 'a big group scan fast query column window big merge batch hash sort order data table column vector group batch merge table filter agg column table row line value line window part slow order window fast data scan window data stream small batch order stream column the merge value vector customer part data filter batch spark line batch scan merge fast batch customer merge', 371, 3, 1),
-      ('https://synth.example.org/doc/276', 'html', 'a window part data data spark line spark merge stream big data', 62, 3, 1),
-      ('https://synth.example.org/doc/277', 'html', 'vector group group fast part filter data slow value window table group small row value window data hash group hash key small agg scan join hash filter vector scan the window spark customer big row customer line group small order scan sort query vector data join sort window slow table batch column order the scan table fast customer query join vector merge data the table slow agg', 380, 3, 1),
-      ('https://synth.example.org/doc/278', 'html', 'merge hash spark query table join the batch vector value key order customer small value merge hash agg vector big stream small agg stream scan big key', 150, 3, 1),
-      ('https://synth.example.org/doc/279', 'html', 'order window data vector row line data big customer hash a big group line hash fast row spark customer batch order spark hash column value column part key the spark agg the small hash join table join row group sort vector vector window column order row window query small column scan spark batch stream row agg part group', 321, 3, 1),
-      ('https://synth.example.org/doc/28', 'html', 'filter vector big customer table row sort line agg stream slow group line hash join query row small hash line batch customer the stream filter agg fast order big line part window order data line column order hash a the merge merge stream big data spark row join column window small spark stream part big query filter part spark agg order agg join a value group column merge slow sort big customer value a agg hash table sort row window small customer the a join sort', 466, 3, 1),
-      ('https://synth.example.org/doc/280', 'html', 'customer big hash column fast key scan join query sort part a scan row the row sort row big order value small row filter merge small big batch slow batch line join stream sort order the filter part line agg data spark batch order window agg part fast window key big data data part hash filter batch order agg value data slow big agg customer scan sort data key a vector order key filter part query batch scan customer hash query sort small key small data agg agg vector sort key hash scan value hash small', 505, 3, 1),
-      ('https://synth.example.org/doc/281', 'html', 'group query window table hash filter filter key line scan a', 59, 3, 1),
-      ('https://synth.example.org/doc/282', 'html', 'key query join sort hash scan filter data spark filter sort merge big query vector small a column small the part join the slow the spark fast scan order spark scan join filter big join batch stream customer scan a batch order row spark group join hash fast the key order key order scan row vector merge big batch row fast vector the sort row filter', 348, 3, 1),
-      ('https://synth.example.org/doc/283', 'html', 'agg table key hash fast window order fast order line agg group row order part part query big a batch batch data data filter batch column query table a line data customer data big column column filter vector agg value value query stream agg column agg join order merge data slow hash key table agg value stream the customer big merge stream key batch join sort the query data hash vector agg line spark filter sort value query a slow batch group', 444, 3, 1),
-      ('https://synth.example.org/doc/284', 'html', 'column slow scan filter scan line batch order small table sort small order join row column fast small sort query filter hash hash customer slow join scan window column filter a small table window slow a group batch filter window line data row part group stream the hash fast spark filter line the agg batch a customer a table scan data slow filter table vector merge vector spark group line column batch slow join row small stream customer agg key part', 452, 3, 1),
-      ('https://synth.example.org/doc/285', 'html', 'stream order sort fast big slow group column data agg stream scan group column hash table hash fast merge row filter vector vector group window part window join agg scan agg hash join small big value key query big row scan fast merge the fast value line value stream row table vector group window query window sort data the group query value agg big vector filter value stream', 376, 3, 1),
-      ('https://synth.example.org/doc/286', 'html', 'hash row customer group value data big spark hash column the window hash small part data agg fast a table customer sort a column value spark part customer table slow agg slow', 174, 3, 1),
-      ('https://synth.example.org/doc/287', 'html', 'sort stream vector vector small vector customer column sort order a order fast query small vector data value part window vector hash hash filter small vector join the agg merge group big query window join value order fast filter slow big spark stream part fast table a big the small agg filter window row line data key sort small column hash batch scan agg merge a join slow scan agg batch sort a small scan value hash big table vector part key join stream window table value stream vector', 489, 3, 1),
-      ('https://synth.example.org/doc/288', 'html', 'small merge a customer data window order sort hash scan part value slow order key window batch agg row column table window fast window table key the filter vector part window column merge batch order filter part row small vector row column row part row merge value customer the line window merge hash part merge part agg big window query query column stream batch sort fast batch agg filter column query slow query scan customer spark batch row order table', 456, 3, 1),
-      ('https://synth.example.org/doc/289', 'html', 'batch vector fast big sort order small a part scan row key data group group group key the window sort query customer table window order merge key column sort agg query hash big column hash stream batch', 201, 3, 1),
-      ('https://synth.example.org/doc/29', 'html', 'spark query vector vector slow stream group a value data order slow hash spark small small agg column scan hash key fast a key column row value value merge a agg spark table hash value group table slow order vector join row filter order merge vector fast slow sort sort stream query row a filter stream window small table batch data query query join scan a small sort data hash window part the table query the order filter filter the stream', 440, 3, 1),
-      ('https://synth.example.org/doc/290', 'html', 'big key order stream column column filter data row customer group hash slow the query hash key sort fast column', 111, 3, 1),
-      ('https://synth.example.org/doc/291', 'html', 'customer batch value join hash a big value key big small vector the merge data stream query fast agg scan agg value order scan batch value group filter line batch key slow scan a agg sort data hash row column sort sort sort query order column a data value merge customer small agg order value part key sort a key query row the column fast query group join big group stream column window spark a merge agg row table small join the part a table scan group customer row', 466, 3, 1),
-      ('https://synth.example.org/doc/292', 'html', 'table a part key a value fast hash big fast data customer scan join stream row slow fast batch query stream stream order column fast window filter merge value column value query scan batch group fast a merge small join join group hash big slow filter stream small data spark vector stream data window column', 307, 3, 1),
-      ('https://synth.example.org/doc/293', 'html', 'table table slow stream a the hash join big order vector stream table the part agg fast filter a column key window fast table customer merge hash window order big slow stream fast stream filter group row group batch window query customer spark agg column big column key row merge order hash filter slow agg part fast order spark join table window a value stream batch big the table group agg batch merge small order spark', 421, 3, 1),
-      ('https://synth.example.org/doc/294', 'html', 'batch hash agg value window hash agg agg key value sort vector agg data a value big big agg query line agg part merge big order merge line batch a batch', 152, 3, 1),
-      ('https://synth.example.org/doc/295', 'html', 'scan filter column sort big filter line line data data query scan group fast data column slow window column batch stream table key join join order the the the data slow query query slow join fast join scan scan value row scan query big query merge data fast sort part customer line window group query a line sort a fast hash vector batch big column key data line batch scan slow fast window slow spark batch line customer', 421, 3, 1),
-      ('https://synth.example.org/doc/296', 'html', 'column row vector line agg stream sort group filter agg the the merge part value stream filter order filter query window column column window slow a join part line merge order customer agg value sort group line small window query vector query query join the group query sort key vector small vector part hash data part query filter spark window merge line key hash column big merge agg join query line query row column join data group column batch window agg a table slow data join slow key', 490, 3, 1),
-      ('https://synth.example.org/doc/297', 'html', 'part query line vector customer vector query hash hash window table merge sort customer part value vector customer slow part key fast the query scan a big big join sort query value agg table customer key spark window merge slow window table data line spark hash part filter value vector vector row data order data filter', 320, 3, 1),
-      ('https://synth.example.org/doc/298', 'html', 'order agg column group data key part value small order line key a sort vector key big customer column customer customer slow fast filter customer big query slow scan join filter key value query a key column big vector fast data vector fast line small data window table spark merge line batch small slow column window vector row small sort vector big line stream key order line agg merge order scan filter table group column key query batch customer group window spark group table table data value', 496, 3, 1),
-      ('https://synth.example.org/doc/299', 'html', 'join sort value query filter line table slow hash filter filter scan big small a scan big merge data key the merge a batch batch slow big filter the spark group fast join stream scan small sort the filter filter the line customer part merge merge data join customer customer spark big customer column table value order customer filter order a row order vector', 359, 3, 1),
-      ('https://synth.example.org/doc/3', 'html', 'fast column table row filter key fast agg query order join small the customer slow fast batch hash batch slow order window merge value column group part hash value data stream vector join data line vector value table join customer a slow window customer the group query group part', 280, 3, 1),
-      ('https://synth.example.org/doc/30', 'html', 'agg join stream filter data stream group column vector hash slow filter sort line sort a customer query part scan query batch batch window join agg agg sort table slow filter window small column join filter filter group row query join sort order value small table fast query part value fast sort customer column small scan stream stream row line table filter filter small spark order scan fast order slow query the scan hash merge order group batch scan a column big window order big spark spark part row part vector agg vector table column', 540, 3, 1),
-      ('https://synth.example.org/doc/300', 'html', 'scan customer hash order scan batch scan part vector the scan vector sort fast row a row window part window column customer customer hash filter order group scan query sort order query column order data spark value value query window table scan table customer big row column part group small order line vector part slow big order key part small agg batch order a sort query batch column a the agg scan row query spark customer spark value hash', 443, 3, 1),
-      ('https://synth.example.org/doc/301', 'html', 'merge slow line group row big query join query key the value batch table spark value hash value value the a stream query batch key fast window column part filter small order scan column join filter key vector stream table spark window query fast scan scan fast customer line scan group the scan sort query hash customer value scan fast column scan group hash sort batch a value window slow', 389, 3, 1),
-      ('https://synth.example.org/doc/302', 'html', 'table batch agg part spark key join a filter merge window slow query merge column column value column', 101, 3, 1),
-      ('https://synth.example.org/doc/303', 'html', 'batch agg group join agg window row merge order slow order group fast small merge order filter table table small window hash sort batch a key value line big value query row scan scan window column agg row key merge slow customer join a fast small small fast order part stream value window sort vector part line big small value a batch group order line slow agg join column vector spark big row a data line column big a sort slow small stream spark order', 453, 3, 1),
-      ('https://synth.example.org/doc/304', 'html', 'column value value filter data line the vector join merge the table merge a table group fast group join join key', 112, 3, 1),
-      ('https://synth.example.org/doc/305', 'html', 'window sort merge filter small a customer small agg customer query scan scan query join window spark stream column vector join window filter line the group merge sort agg part the column slow value vector query stream sort batch scan spark query window group slow column slow order agg fast value part scan spark fast part small stream the data line sort query scan scan big stream slow column a line scan spark merge table hash value filter join hash order stream table', 470, 3, 1),
-      ('https://synth.example.org/doc/306', 'html', 'batch agg data scan customer part agg value small column small vector a join group data window merge column join group value customer merge join key fast key the big batch table key stream fast value vector join the filter line merge join window customer slow part part merge merge batch row row vector window merge merge merge vector stream part group big small merge a spark scan hash scan big batch data slow column column spark query row small sort', 452, 3, 1),
-      ('https://synth.example.org/doc/307', 'html', 'a merge join stream stream row join customer a big big', 54, 3, 1),
-      ('https://synth.example.org/doc/308', 'html', 'column small customer stream line scan stream batch small window window column big big line big the hash query', 110, 3, 1),
-      ('https://synth.example.org/doc/309', 'html', 'hash row table key stream agg fast vector spark fast row small vector small sort scan agg line sort order the query hash small filter line row batch part big scan scan table window fast value query scan part part big join hash fast customer table table group sort customer the key batch scan merge sort stream value column', 322, 3, 1),
-      ('https://synth.example.org/doc/31', 'html', 'vector a filter slow hash sort column the filter spark slow window hash customer filter order hash column join join row key key row group join sort agg batch column key filter window slow window agg batch agg the batch window order big query scan merge line order window sort column fast column line the key order sort fast hash agg column row window the merge group order agg small small batch hash value join part line batch vector order value sort filter key', 461, 3, 1),
-      ('https://synth.example.org/doc/310', 'html', 'data join slow part hash hash small the sort table row a fast customer vector the hash batch stream window data group data part row key batch part slow slow line join filter small group', 185, 3, 1),
-      ('https://synth.example.org/doc/311', 'html', 'group value row a filter batch line group merge sort sort customer stream filter customer value', 95, 3, 1),
-      ('https://synth.example.org/doc/312', 'html', 'query slow merge sort filter column agg small agg stream small value window the small filter batch the stream value value customer batch small the fast scan agg customer customer sort the vector order small fast customer part stream', 232, 3, 1),
-      ('https://synth.example.org/doc/313', 'html', 'row spark part the customer value big a merge customer query spark line query sort sort key value value order filter agg part stream batch sort fast key slow join query spark query line', 185, 3, 1),
-      ('https://synth.example.org/doc/314', 'html', 'big order customer slow value scan query window value vector part filter batch batch customer spark slow hash merge value fast value key a big table the a stream vector fast column merge a data sort merge scan scan hash column small order join group part fast spark merge customer fast merge vector big row scan column part query filter filter order window', 356, 3, 1),
-      ('https://synth.example.org/doc/315', 'html', 'value query stream small query stream line sort value table group join big column merge small a order part fast value order the part sort customer key stream part value filter value scan table customer sort order batch filter value row query agg merge table sort window batch key the batch column order column scan', 314, 3, 1),
-      ('https://synth.example.org/doc/316', 'html', 'query fast table window value query big column table join fast fast line group column query the filter agg query agg customer stream group stream the scan the part scan a value column merge filter scan data sort table hash data small data window order key part merge merge hash column a slow column column line a order customer order the', 337, 3, 1),
-      ('https://synth.example.org/doc/317', 'html', 'small customer column vector group join scan key agg batch query join part small table a order scan batch batch window window value table stream the filter join part query hash line hash scan big slow customer sort row table spark stream hash small a line big agg join small spark batch a small row order query sort order sort fast order the customer value column the join value batch the part part column stream stream the merge batch part fast filter fast order join column filter join stream table the small data', 515, 3, 1),
-      ('https://synth.example.org/doc/318', 'html', 'data spark window customer data small query sort join hash big table big column value agg slow stream line data spark fast agg vector line merge agg filter join big hash a scan fast order fast fast scan a vector window vector table order customer join spark the batch query agg the vector filter row fast big fast agg group fast filter stream vector big hash agg part window row merge the', 388, 3, 1),
-      ('https://synth.example.org/doc/319', 'html', 'line filter stream merge line customer group hash vector sort the merge line merge customer part line hash vector value join spark batch stream window query query line window table batch stream slow a table scan customer part batch filter column row small window column group vector part vector data scan scan customer the window merge stream part key stream query order', 370, 3, 1),
-      ('https://synth.example.org/doc/32', 'html', 'merge value scan slow vector join filter sort agg window sort stream big table column order part small filter spark vector agg join slow agg', 140, 3, 1),
-      ('https://synth.example.org/doc/320', 'html', 'the window agg vector query small fast vector batch row value agg filter filter vector merge stream window value join batch order spark batch row column the line order order customer the fast spark filter scan query merge vector column sort key fast value stream value value merge group a data window row a big column window', 324, 3, 1),
-      ('https://synth.example.org/doc/321', 'html', 'table part column merge big column vector window sort sort line join vector table order filter stream spark line vector key group slow fast data batch scan spark vector order vector agg fast merge line stream table hash a scan value agg scan batch small hash small fast the spark line window value column line merge small filter customer customer query the', 356, 3, 1),
-      ('https://synth.example.org/doc/322', 'html', 'value spark slow small sort column customer order slow vector small a line slow key sort merge data scan spark join group fast spark slow key customer the window spark sort stream window window data order merge data customer', 224, 3, 1),
-      ('https://synth.example.org/doc/323', 'html', 'agg value order value window data row group batch batch value vector batch order big small window customer vector the spark part stream key merge vector table query slow data key spark order window small window row a spark key slow vector line value fast agg column agg filter stream customer merge sort join window join spark slow group merge filter the table big query key agg query vector data key column filter data table the slow merge big column query group key group order part group big stream batch', 507, 3, 1),
-      ('https://synth.example.org/doc/324', 'html', 'column data batch key window a stream spark hash fast fast agg sort hash line merge hash small agg query the a hash agg table a order stream line merge column slow data the batch agg order hash group merge line group spark the batch spark fast query merge customer stream', 271, 3, 1),
-      ('https://synth.example.org/doc/325', 'html', 'part part line window filter row scan line batch spark small merge a scan scan slow merge row', 93, 3, 1),
-      ('https://synth.example.org/doc/326', 'html', 'group part row fast value stream query merge key slow data batch a vector spark a slow spark scan fast agg stream stream query vector vector slow table scan merge table batch merge a hash vector row vector vector table', 218, 3, 1),
-      ('https://synth.example.org/doc/327', 'html', 'group key vector spark row group fast hash query customer window order', 70, 3, 1),
-      ('https://synth.example.org/doc/328', 'html', 'line hash query scan query hash join key data the query customer row window fast agg group merge part key merge data line vector customer big vector table vector batch big filter table agg customer big spark slow spark big', 222, 3, 1),
-      ('https://synth.example.org/doc/329', 'html', 'column vector small agg a merge row table window column fast scan batch row spark order group batch key key query merge slow scan join query order order stream join row the small slow order query spark window part join batch column agg batch order vector join hash big fast batch order big line big order scan small query line hash spark spark big table small a vector hash sort row hash table key fast merge key fast vector row part the agg batch a', 449, 3, 1),
-      ('https://synth.example.org/doc/33', 'html', 'data line slow stream order hash vector data slow sort dup', 58, 3, 1),
-      ('https://synth.example.org/doc/330', 'html', 'agg join scan merge small small query row window window join group a batch key a join line group join scan key data slow part customer a scan value agg column batch customer batch group customer scan window agg join table agg fast row join scan filter fast fast vector customer order fast column customer big spark hash spark the filter join slow group group key hash the agg scan key big row row order spark row sort key spark data the customer agg join customer key data slow line group value batch customer vector', 516, 3, 1),
-      ('https://synth.example.org/doc/331', 'html', 'sort window customer value group part agg data stream customer slow column agg value join vector slow agg data scan column fast part slow group big join merge column agg column line stream big fast hash sort a scan slow query join table batch customer part customer scan fast column data row hash sort', 301, 3, 1),
-      ('https://synth.example.org/doc/332', 'html', 'key key key part stream window fast table part big vector a small vector stream fast part hash scan part big the data stream part fast row part line agg vector order join sort query scan fast column data stream the the line hash join hash sort query vector agg data customer window hash merge window big join part customer customer group the column part scan vector a customer customer sort value merge small group fast agg', 423, 3, 1),
-      ('https://synth.example.org/doc/333', 'html', 'hash data fast customer fast join sort scan agg filter part part key value fast part the order spark part customer filter column scan sort merge order filter vector part scan slow the key the order agg small batch row scan filter the scan data sort slow table order column data stream merge part agg big hash order', 314, 3, 1),
-      ('https://synth.example.org/doc/334', 'html', 'filter big key scan small spark customer line vector vector line order join fast table table row big customer part customer vector big sort small big part stream row order data agg query line column merge group part row slow vector batch stream sort query window a line join hash part row stream group customer part the scan spark batch line line the hash agg part filter column fast sort stream small big merge key merge vector window join query the line vector a sort batch value batch spark table column spark column row', 523, 3, 1),
-      ('https://synth.example.org/doc/335', 'html', 'batch a query customer group line window window order a merge key part group value key line filter agg vector the window vector query filter batch batch window key data group part small hash', 190, 3, 1),
-      ('https://synth.example.org/doc/336', 'html', 'sort the spark filter row scan a spark vector slow scan data window table small small big value merge value agg query slow column scan query join spark merge line part column row', 178, 3, 1),
-      ('https://synth.example.org/doc/337', 'html', 'vector row the value agg window hash a scan order filter stream stream order table agg key key', 94, 3, 1),
-      ('https://synth.example.org/doc/338', 'html', 'slow query data scan agg customer value filter scan merge small order scan group batch hash part order query a data group merge line table small sort fast sort value small order hash key sort fast query merge stream big hash query column part key merge scan window filter', 271, 3, 1),
-      ('https://synth.example.org/doc/339', 'html', 'window scan table agg table big window agg window vector key slow the merge merge the big the filter hash line sort part window spark hash big query query stream batch order column small big column hash slow query', 213, 3, 1),
-      ('https://synth.example.org/doc/34', 'html', 'scan row big customer scan merge group window sort vector slow value big hash order sort spark sort part small column line merge agg join column big agg query data row slow the small vector spark join fast part query join slow small spark scan order column row hash the query window line customer stream small window row key sort group key scan table join window hash key table the merge line spark line a row vector line batch', 427, 3, 1),
-      ('https://synth.example.org/doc/340', 'html', 'data query slow a value value scan vector batch batch query column filter spark key agg small query data sort scan scan filter merge query filter the key customer big the value customer line order order data key spark batch filter spark key line value spark spark key filter fast table filter small spark stream window value', 324, 3, 1),
-      ('https://synth.example.org/doc/341', 'html', 'scan column sort column scan line column value value stream spark stream group window stream agg spark column merge vector value big data the scan customer part sort part table key part scan scan filter key column scan vector hash data group', 241, 3, 1),
-      ('https://synth.example.org/doc/342', 'html', 'merge fast vector big line a key spark order hash hash sort vector slow key small fast customer line fast row table line query the line fast window hash the agg part spark value small fast hash big merge scan window sort agg table stream order table scan stream big hash line line data stream fast query filter order agg key table table slow value window hash scan the order table column a query stream table filter big small column vector vector value big vector scan slow row table customer order big order part', 513, 3, 1),
-      ('https://synth.example.org/doc/343', 'html', 'agg batch order data slow part sort window table part batch spark spark vector customer slow agg hash column join batch line query line slow spark fast the sort hash query small filter sort filter key slow column spark vector a the join data key stream spark value filter value group merge hash vector hash table column customer row spark value window row stream column join agg agg value stream spark key window column stream agg sort merge big stream value join batch agg small value row line spark the hash order group spark filter hash stream vector sort', 558, 3, 1),
-      ('https://synth.example.org/doc/344', 'html', 'scan part query merge row value stream group fast slow part the small customer order order agg join', 99, 3, 1),
-      ('https://synth.example.org/doc/345', 'html', 'table row customer value a scan value table row row vector scan the query order stream line a data vector batch batch merge join join column spark stream small a vector value sort column filter row big sort slow key stream batch part row scan order filter stream the key stream small column window column table agg group merge', 326, 3, 1),
-      ('https://synth.example.org/doc/346', 'html', 'customer filter value big fast window scan filter small order key data merge join data slow value part join key group group order batch customer row batch batch line batch key customer data query customer fast agg big filter window query', 237, 3, 1),
-      ('https://synth.example.org/doc/347', 'html', 'table stream group a hash big a merge sort row agg stream agg sort hash hash line spark column column spark stream agg filter customer stream batch customer hash', 161, 3, 1),
-      ('https://synth.example.org/doc/348', 'html', 'table table vector the spark window batch scan small hash table table small order big sort data vector batch query query group table big filter sort vector table table join batch column stream merge hash group fast value order the group slow merge part line merge window stream data query table', 294, 3, 1),
-      ('https://synth.example.org/doc/349', 'html', 'spark fast a table customer small part scan join spark value line hash scan window a vector merge big key line a agg batch customer join batch a the vector filter stream slow value vector fast agg table row value filter slow value data query column join table fast line group key the dup', 287, 3, 1),
-      ('https://synth.example.org/doc/35', 'html', 'the small group window sort table value fast key the stream order scan slow small big fast line column row small table a column join merge scan batch data sort line group scan agg slow vector hash agg agg key sort a row row scan row group key query sort slow vector big hash data fast customer value big group a vector hash line window window hash slow slow sort value join hash agg fast customer slow scan order table spark a value table sort join slow agg table fast part', 473, 3, 1),
-      ('https://synth.example.org/doc/350', 'html', 'value scan sort merge merge fast query filter data filter window agg row line fast data hash merge a slow part line slow table stream value query batch big vector join join the slow part row big value filter a batch the vector slow small group window group agg line query a scan', 278, 3, 1),
-      ('https://synth.example.org/doc/351', 'html', 'data order batch spark row vector query slow big value small the window small customer fast row row window join row big small join sort vector table order part line group merge group window big query vector line row customer the order hash the fast stream key agg filter scan stream part sort fast part sort column row the window batch agg agg hash part sort batch spark the agg', 378, 3, 1),
-      ('https://synth.example.org/doc/352', 'html', 'part query data join part the key scan sort stream the big filter vector merge', 78, 3, 1),
-      ('https://synth.example.org/doc/353', 'html', 'key small big query small customer window group table vector line filter big order big a join', 93, 3, 1),
-      ('https://synth.example.org/doc/354', 'html', 'spark column order small batch fast window vector merge scan filter spark filter agg group stream part data window spark order row small stream batch scan agg part line part data a sort sort part sort agg value vector order window fast customer merge the window part spark line table value query part filter part scan data scan query column hash value group merge slow window stream fast', 387, 3, 1),
-      ('https://synth.example.org/doc/355', 'html', 'the query stream part join stream table the big table scan part value slow join slow sort key query agg hash row small row big a query query slow batch small row slow merge group the scan spark row row group spark key value big customer line value big join merge column a slow big stream big group hash query slow group column agg agg the part merge fast query slow sort scan data small value', 392, 3, 1),
-      ('https://synth.example.org/doc/356', 'html', 'data merge value spark small agg group window vector join data batch hash sort big customer stream window filter line query hash value scan data spark hash slow key fast spark value window stream spark row value spark row stream value group order slow fast scan value key key data the join join stream part customer agg spark customer part group data batch merge order key query key sort group vector table small small column group key table filter a data scan join spark big the sort agg agg spark slow data query table filter', 527, 3, 1),
-      ('https://synth.example.org/doc/357', 'html', 'fast spark window join a key key a slow vector small order query spark value sort vector column customer scan join merge stream big small line batch slow fast customer key spark scan part order line agg order data column part batch customer column part order scan batch filter row data key slow small window table query query scan hash small value row fast agg spark small part filter customer join slow slow query line data part', 429, 3, 1),
-      ('https://synth.example.org/doc/358', 'html', 'line sort group row part data a vector big table big window merge join scan join merge window batch slow query key key data customer the merge line query sort group filter value agg table small line table spark key spark small column customer sort line sort window window big table big hash column filter query window batch part table group batch row table small column spark table fast spark big merge order value key scan slow query filter column big part scan filter data customer key fast a fast', 499, 3, 1),
-      ('https://synth.example.org/doc/359', 'html', 'fast value data window fast spark group a value agg table order query agg query sort small agg vector value data batch join table key value merge order part batch group slow customer join small merge', 199, 3, 1),
-      ('https://synth.example.org/doc/36', 'html', 'big agg small filter small value part stream sort spark spark small join part line line scan customer query fast vector order agg line join big fast scan merge table a table merge fast customer fast the big table hash table window row sort key fast scan fast hash small the hash query hash query batch small fast row row window row part order row key vector part small column a value row line a order query merge', 412, 3, 1),
-      ('https://synth.example.org/doc/360', 'html', 'small big order scan fast sort a value stream fast join column big line value value filter merge data a part filter big line group line agg hash hash query spark sort slow hash order query order sort column small part order the join order hash small data slow group spark window join big stream join the a group table column filter sort merge filter table join key part the sort part join table agg dup dup', 406, 3, 1),
-      ('https://synth.example.org/doc/361', 'html', 'a line scan column query big filter customer stream a a group filter stream window value column stream fast stream table key order line key table query hash column value column line hash batch join key vector spark fast part stream line value part fast filter vector fast', 271, 3, 1),
-      ('https://synth.example.org/doc/362', 'html', 'scan agg merge table value batch agg big agg scan window fast the the slow agg stream batch customer big batch the hash customer data small order small merge slow small customer spark order big order a slow big key value small spark stream fast small stream sort part vector order sort small batch', 297, 3, 1),
-      ('https://synth.example.org/doc/363', 'html', 'filter key small window hash column hash table fast group filter scan query key value join data data a spark agg line group slow filter small join join vector window window agg part query stream the line customer sort small small key small a a order the vector stream scan merge hash order the query line filter column batch merge part batch part slow scan order slow data join stream column line a data key sort filter column query part fast table join sort a part', 465, 3, 1),
-      ('https://synth.example.org/doc/364', 'html', 'small customer column fast line sort data customer column group merge stream data data data line hash agg order fast stream the join query join vector group row key customer spark filter hash line vector order join merge value big scan small group big column column batch slow a line batch row small the key vector small part stream data batch data stream merge a a sort line key stream row join stream', 402, 3, 1),
-      ('https://synth.example.org/doc/365', 'html', 'data customer vector big the fast stream agg fast stream key a slow key part column vector join data customer fast merge vector big the vector order order batch batch key value table join line column order order column column big small customer batch key filter scan slow scan', 276, 3, 1),
-      ('https://synth.example.org/doc/366', 'html', 'hash sort part group spark column sort line part part line line value line scan fast stream the agg group part hash big a big query filter line hash slow customer spark a line column batch part group order fast hash big line sort column part a vector', 250, 3, 1),
-      ('https://synth.example.org/doc/367', 'html', 'small the key join row join the order fast key a filter sort slow vector fast hash filter customer line hash vector data merge group customer spark window stream slow value group part table window a group the merge column a order key a scan small batch fast spark small column big a query fast agg group customer row column key small key fast column order value big value fast key slow batch column spark part the window a part order a customer', 444, 3, 1),
-      ('https://synth.example.org/doc/368', 'html', 'the value data group a spark merge the spark sort order agg merge merge spark sort value batch row vector value order filter small join sort column order order sort hash sort part the filter spark table agg query spark group slow a a key batch group big agg group big', 267, 3, 1),
-      ('https://synth.example.org/doc/369', 'html', 'a query vector value merge column agg sort the vector data batch the line hash query customer spark fast query filter slow line a batch fast window window query key agg spark key merge merge spark window slow merge order batch big vector spark window slow stream slow window vector a a order query data column part fast customer scan customer window the hash stream part data batch row line group merge hash data batch group a group agg big merge fast query scan merge vector query', 481, 3, 1),
-      ('https://synth.example.org/doc/37', 'html', 'customer big sort query part spark slow data customer join stream window hash sort merge the batch sort stream agg slow agg filter order order customer big agg filter data stream stream group query order query hash scan merge order customer fast', 245, 3, 1),
-      ('https://synth.example.org/doc/370', 'html', 'data stream query vector row scan row merge spark row stream key query', 70, 3, 1),
-      ('https://synth.example.org/doc/371', 'html', 'join sort hash big table query column group row slow the line key small row stream key batch merge window hash filter sort hash stream customer window row data sort key filter customer query join scan query data table join batch filter fast', 240, 3, 1),
-      ('https://synth.example.org/doc/372', 'html', 'value sort part query line sort the hash the batch row spark row window spark batch data line column value big merge window a scan line value window group agg slow table sort key hash scan table small merge big row row big vector spark value table batch line order vector join small window filter row table row the group customer group filter sort a big part big order value data big', 383, 3, 1),
-      ('https://synth.example.org/doc/373', 'html', 'small customer sort group slow vector small group agg data value batch value vector merge sort window customer key hash merge group customer filter hash slow part stream vector value order fast line row stream value group big big part line vector customer line query sort the agg hash', 284, 3, 1),
-      ('https://synth.example.org/doc/374', 'html', 'big scan row group data slow a filter line filter a agg filter the merge group line agg data small stream agg order customer table table window row row vector filter small order window join row sort scan window column group join small row agg row small filter fast fast column window window part fast small join batch slow fast fast value stream big line group table row row window window vector filter merge value value sort query key join window join a join part the filter table scan merge group vector spark table fast value', 528, 3, 1),
-      ('https://synth.example.org/doc/375', 'html', 'row filter hash data small data filter line data small fast big table small scan query group a group value spark group table batch small a filter merge agg hash big line vector customer row', 189, 3, 1),
-      ('https://synth.example.org/doc/376', 'html', 'value scan order sort line value value spark agg agg hash column spark column the join sort batch value a batch merge part sort customer line group order sort filter stream order value spark order data small slow a slow slow small big scan scan query sort vector line order slow join line join order batch value fast row filter filter value hash small order sort row filter agg customer order data vector filter part key fast query column spark key customer sort sort window data table', 485, 3, 1),
-      ('https://synth.example.org/doc/377', 'html', 'a a part batch customer agg data sort slow scan merge vector big filter spark stream group query part value data big line agg batch fast line part', 146, 3, 1),
-      ('https://synth.example.org/doc/378', 'html', 'scan filter data scan small scan the key vector key join big hash window vector a merge small fast stream slow spark line row a a stream query row big scan merge key column key merge order data order column line a spark big a merge the merge slow merge big customer spark small join key agg row slow value stream batch group stream small stream filter filter row part value group data', 384, 3, 1),
-      ('https://synth.example.org/doc/379', 'html', 'table part table table join order hash customer join row join sort part a stream query table a table data spark join a group table window stream query column slow group table join agg table big a line vector batch slow filter data data group sort join', 251, 3, 1),
-      ('https://synth.example.org/doc/38', 'html', 'row value order table a value row big spark line scan stream stream stream spark merge column part slow window batch order column small order big a value line line part sort stream sort query scan sort column filter batch key a value batch batch column group a hash small vector small query slow customer key scan batch scan join vector query filter table spark key table spark spark sort group merge filter group table group filter vector', 439, 3, 1),
-      ('https://synth.example.org/doc/380', 'html', 'query hash sort sort sort line query hash group group batch table big order join row sort fast vector order data a agg column vector the order row value group part big query customer agg agg join slow group agg sort merge slow customer spark agg batch part the big join value hash column stream key line row line customer row order data slow big big sort line value key agg order query the agg table hash line stream vector spark fast value customer stream agg vector spark key the spark join stream table scan window', 517, 3, 1),
-      ('https://synth.example.org/doc/381', 'html', 'merge customer row filter spark hash a window slow value scan hash slow order batch the table table hash window a table sort big big scan slow key small sort data small join filter row key part data hash scan the agg a a fast sort order value part merge slow fast window part customer table agg group the key merge customer agg table order customer fast line part order customer', 378, 3, 1),
-      ('https://synth.example.org/doc/382', 'html', 'the customer merge key value window big order a scan a', 54, 3, 1),
-      ('https://synth.example.org/doc/383', 'html', 'vector vector small big agg big agg query column spark agg vector the group window line join slow row the key scan line big', 123, 3, 1),
-      ('https://synth.example.org/doc/384', 'html', 'value a query scan join spark filter small data vector row part small small window fast group row slow part group table spark', 125, 3, 1),
-      ('https://synth.example.org/doc/385', 'html', 'hash row merge table spark slow slow spark small query sort column the window stream scan slow row part sort line column line query vector part merge part window filter the spark customer stream join merge hash', 210, 3, 1),
-      ('https://synth.example.org/doc/386', 'html', 'sort vector data merge vector sort column batch fast stream fast value spark column key window table small hash customer sort big order fast spark big sort row order spark table key value stream fast column scan group data row table scan a merge order the a join column column group data query slow batch slow stream column column data filter fast a line scan join batch vector order data row', 392, 3, 1),
-      ('https://synth.example.org/doc/387', 'html', 'stream order part merge scan filter the a order line join the data key group sort scan hash batch window join table part slow small key table hash order merge join the big data value scan line customer merge line scan scan column data hash fast join group the window table join query the slow value line slow hash small spark line batch group query sort merge scan merge window small vector join merge hash window value table batch small query line data', 453, 3, 1),
-      ('https://synth.example.org/doc/388', 'html', 'stream sort join agg scan spark value the window window spark sort line batch data vector slow the data order slow scan table batch join column customer row spark group column join data big join order scan fast part merge row vector a hash fast part filter', 256, 3, 1),
-      ('https://synth.example.org/doc/389', 'html', 'scan column big group filter join slow scan stream sort column key group value a agg big the data key agg big stream join join hash line group the line scan customer big join', 174, 3, 1),
-      ('https://synth.example.org/doc/39', 'html', 'part value fast key customer column join slow line key window order data hash group fast hash group window table table value batch join small query vector agg stream data customer key big small column batch order a filter agg table data row line filter big value group small stream small key part stream customer a data', 319, 3, 1),
-      ('https://synth.example.org/doc/390', 'html', 'batch order fast sort table small filter big fast part sort customer stream group a merge small scan customer merge a column key data data table column a batch query column filter line a window row small data key value part customer vector big window small order customer sort order slow sort value value key agg line line spark stream row hash value slow query key part slow hash line line merge data line table window scan slow order row group slow spark column vector batch window fast line order the sort the row table part data group', 538, 3, 1),
-      ('https://synth.example.org/doc/391', 'html', 'agg the window column the fast stream key merge key query window a batch sort value hash hash agg part key column sort order sort row slow agg big line column order a stream big the filter agg scan slow agg column filter group agg customer sort slow row spark batch row stream column table row column value stream order vector the agg join vector group hash query the a line vector filter group data join window customer hash hash stream customer key agg key scan the group agg table dup', 487, 3, 1),
-      ('https://synth.example.org/doc/392', 'html', 'sort slow hash slow sort line column row stream spark group order query value window stream value window scan sort sort the big slow the value agg hash order value part spark column big small merge table the line vector column filter column vector batch window scan column small key window', 289, 3, 1),
-      ('https://synth.example.org/doc/393', 'html', 'join merge order part agg line vector small slow window sort filter agg fast slow slow a stream column agg join hash table sort line key small a key small key a filter query window fast sort customer fast agg part batch query stream batch small window the column the spark join join window group line key customer table table vector spark row the a spark value the key the scan line filter merge scan part query filter the hash order hash big scan line window hash', 464, 3, 1),
-      ('https://synth.example.org/doc/394', 'html', 'merge join filter row scan hash scan window value join row group data sort fast row vector key small column scan data small customer window agg part filter vector order agg window customer part fast stream order the table the value the value sort the order stream fast batch line order group sort stream merge join order merge group agg value filter customer scan agg group fast slow batch scan table table value merge vector query slow spark fast order data group query table big filter data agg part vector hash row scan row scan hash', 536, 3, 1),
-      ('https://synth.example.org/doc/395', 'html', 'merge part data the key window order stream agg merge stream column column fast the query filter big fast hash stream scan scan vector spark customer vector query part stream vector batch key a value fast stream window agg table slow a big', 239, 3, 1),
-      ('https://synth.example.org/doc/396', 'html', 'slow a slow group group small data customer join sort scan key part the filter column stream big key filter the sort key query the agg scan a key column filter vector row line scan fast column spark join filter query spark sort small slow agg batch window part sort the slow fast window sort data data scan slow join hash data scan fast filter spark window sort merge batch order value agg data window small agg fast table stream line the join small slow table scan sort slow spark table join value group the window scan group scan', 531, 3, 1),
-      ('https://synth.example.org/doc/397', 'html', 'key big vector scan table sort row fast table big big stream', 60, 3, 1),
-      ('https://synth.example.org/doc/398', 'html', 'sort customer filter stream big row filter data value line customer batch query small order key query data join join filter big fast fast', 137, 3, 1),
-      ('https://synth.example.org/doc/399', 'html', 'key group spark merge a hash join join merge stream data order spark key key table agg value key part query slow data order hash small spark hash column join column query slow spark column stream row a hash batch spark value query query window value batch part big a batch a scan customer batch the filter sort scan the spark order merge hash fast small order small merge group the window stream vector big vector part scan slow the window merge hash agg group join value customer stream', 487, 3, 1),
-      ('https://synth.example.org/doc/4', 'html', 'agg line group hash vector fast column order line part column scan small order a value query scan slow merge value join spark customer small spark batch hash column window value', 177, 3, 1),
-      ('https://synth.example.org/doc/40', 'html', 'scan part agg agg slow value line merge sort scan fast part batch value a column value small slow line slow join', 112, 3, 1),
-      ('https://synth.example.org/doc/400', 'html', 'key vector scan window spark group slow row scan fast hash agg merge query big', 78, 3, 1),
-      ('https://synth.example.org/doc/401', 'html', 'hash customer big scan spark join small spark line agg slow batch spark line value hash vector part a data key group vector sort stream row value slow sort query query value table a spark the part spark table key a query slow group data line join scan scan the small data big sort order hash agg batch table big line value customer filter stream customer join big column window table fast line window hash the part table key big sort hash merge merge key hash query customer line value', 485, 3, 1),
-      ('https://synth.example.org/doc/402', 'html', 'key agg customer vector fast line query query big agg vector stream line window part join slow table agg query part window hash scan customer window value vector vector order a scan group group stream query vector filter data hash merge sort slow hash customer part', 265, 3, 1),
-      ('https://synth.example.org/doc/403', 'html', 'big order row row spark sort spark order fast window batch the key column scan column group hash agg order group', 112, 3, 1),
-      ('https://synth.example.org/doc/404', 'html', 'line row row customer value merge spark big customer column join a table a fast vector fast a vector value agg spark group query sort data a scan agg small join value customer hash the small key small window part filter sort slow column the column window query filter line agg small group scan a data row column data part order window join stream sort small dup', 361, 3, 1),
-      ('https://synth.example.org/doc/405', 'html', 'key spark scan order vector sort spark slow vector stream merge query column sort batch vector column sort big spark table sort value vector vector table line hash hash fast row group vector line sort part order small big agg spark spark customer group scan sort table query vector sort key sort part order batch column line fast customer row query join batch row window small window', 383, 3, 1),
-      ('https://synth.example.org/doc/406', 'html', 'spark small small value big order fast hash vector the scan small join customer big batch vector fast merge slow merge column spark key join value part join a key scan part value vector join slow sort merge slow filter filter join fast big row table fast hash part the merge join agg window merge join hash query window agg window part line filter small data slow stream agg group merge agg big scan part spark small value fast big merge vector fast data hash merge merge hash column window data vector join batch filter merge vector key hash', 542, 3, 1),
-      ('https://synth.example.org/doc/407', 'html', 'order scan sort window small row a big big vector filter join line data key agg customer order the spark big sort stream query table big spark vector line', 154, 3, 1),
-      ('https://synth.example.org/doc/408', 'html', 'stream slow spark group order table slow the table batch query the line vector filter customer agg value window table filter batch order vector fast part scan column agg group data query small column data filter value the group customer row column key vector the spark key order table big value stream part join agg spark query agg join the column slow', 352, 3, 1),
-      ('https://synth.example.org/doc/409', 'html', 'scan batch merge scan slow table stream fast small data batch agg small join part filter small spark part column group fast fast vector row vector small part scan a sort data line sort part window join part the vector vector merge window agg small filter line spark query customer a key row data order stream data stream spark slow the scan scan line key sort filter small line merge hash stream join the customer spark fast order sort merge', 441, 3, 1),
-      ('https://synth.example.org/doc/41', 'html', 'row slow order group stream fast small customer a window small group slow vector join vector table fast sort group group line the value filter stream window batch join scan scan scan a table key order batch batch merge join order spark the vector fast', 251, 3, 1),
-      ('https://synth.example.org/doc/410', 'html', 'the fast stream filter vector sort fast query small the data customer spark spark key fast spark data small key line join fast merge query hash order column line small scan batch a order the spark fast part scan merge value filter big table part query value slow spark order stream agg agg sort column row part column merge the agg filter vector filter fast key stream query column part slow a the fast order a spark scan small slow small column line column window stream hash window query query sort table hash merge agg table query window', 540, 3, 1),
-      ('https://synth.example.org/doc/411', 'html', 'spark fast a table customer small part scan join spark value line hash scan window a vector merge big key line a agg batch customer join batch a the vector filter stream slow value vector fast agg table row value filter slow value data query column join table fast line group key the', 283, 3, 1),
-      ('https://synth.example.org/doc/412', 'html', 'sort filter part spark value scan column a value batch slow hash data slow row batch customer big customer order sort part sort column query part join a the customer spark scan order group row hash stream stream group hash query slow column group scan a slow query column line row value query slow sort part merge line vector hash fast vector merge window order spark part big big stream group customer stream scan fast stream vector part stream group big filter merge order vector value order a scan value value group', 518, 3, 1),
-      ('https://synth.example.org/doc/413', 'html', 'spark fast window table join customer a batch row join small a', 62, 3, 1),
-      ('https://synth.example.org/doc/414', 'html', 'window vector stream scan query group small customer agg big small small row big agg fast spark', 95, 3, 1),
-      ('https://synth.example.org/doc/415', 'html', 'vector agg big row column row column data table line filter table sort query a join part sort column hash slow window data hash join spark agg column value merge value agg a customer spark filter column batch row fast group customer join row small a data fast scan key group scan batch stream window order table small', 317, 3, 1),
-      ('https://synth.example.org/doc/416', 'html', 'part the row sort filter spark customer table join stream a slow stream small query window join column merge column table order order stream spark batch fast value data vector key line key order sort row join part a slow', 220, 3, 1),
-      ('https://synth.example.org/doc/417', 'html', 'spark value window scan table filter spark scan customer value slow join stream key hash merge batch query group stream stream join a big window table line filter row batch spark row filter table', 195, 3, 1),
-      ('https://synth.example.org/doc/418', 'html', 'customer part value data merge spark batch fast small fast agg hash order vector query column hash query fast order a column key', 128, 3, 1),
-      ('https://synth.example.org/doc/419', 'html', 'query customer scan line big vector join vector column window value data scan merge row spark small vector spark the a line big stream part value query hash line slow slow merge scan vector customer the table hash table stream the value column customer vector value batch hash group order order column sort a table key fast slow value small part', 345, 3, 1),
-      ('https://synth.example.org/doc/42', 'html', 'table table big slow part a filter table table filter sort scan batch data big batch fast the fast the customer window value scan sort row row data big big the a order the merge the group spark fast key a sort big key small vector merge agg fast order slow table scan query value the query join join the column merge data customer group slow customer fast customer window slow query big big query vector row agg row value', 421, 3, 1),
-      ('https://synth.example.org/doc/420', 'html', 'order value spark key query line group scan line agg big order scan data group batch column big row group the key batch fast vector key order table hash key small part filter window agg customer slow hash data data scan sort stream slow the sort the order agg filter key merge value slow line table key sort batch window group order fast vector window group query part query spark order line part value value big row key a big order a sort slow', 444, 3, 1),
-      ('https://synth.example.org/doc/421', 'html', 'group vector part filter filter window query key group agg part query batch batch stream order a stream stream key the vector spark the agg agg customer scan data query customer key slow scan hash sort merge query spark query table merge line order vector fast agg hash join customer window scan customer big vector customer column group spark join fast the order data data', 373, 3, 1),
-      ('https://synth.example.org/doc/422', 'html', 'fast window scan small small stream part join scan row part scan sort a join merge order filter small big value column the line scan order fast', 143, 3, 1),
-      ('https://synth.example.org/doc/423', 'html', 'agg row query line small key part a data value the row slow group order order value batch agg the spark key data join filter sort merge window small batch order query group column line scan filter vector join query batch hash column slow agg slow a customer row row line vector filter data stream spark the filter the big agg sort table vector fast data slow table column line data merge', 387, 3, 1),
-      ('https://synth.example.org/doc/424', 'html', 'agg fast key fast sort big column key line scan group vector hash customer key stream join row window spark order line spark small line small fast slow table batch hash group query row slow batch fast', 200, 3, 1),
-      ('https://synth.example.org/doc/425', 'html', 'window the big scan query the table fast slow small vector column key data line scan filter row query line agg query column query filter customer sort data small data order fast window big part filter', 200, 3, 1),
-      ('https://synth.example.org/doc/426', 'html', 'line fast sort window big line agg hash window group customer order big filter value vector hash sort window big a table slow spark row agg merge key part vector spark batch query query agg scan data table window line group row key part data join', 246, 3, 1),
-      ('https://synth.example.org/doc/427', 'html', 'spark customer key scan a part data agg slow merge a order order key agg spark table agg order slow customer data query part stream', 131, 3, 1),
-      ('https://synth.example.org/doc/428', 'html', 'line hash query scan query hash join key data the query customer row window fast agg group merge part key merge data line vector customer big vector table vector batch big filter table agg customer big spark slow spark big dup', 226, 3, 1),
-      ('https://synth.example.org/doc/429', 'html', 'stream merge agg join order slow sort big window customer part spark batch sort hash agg fast small merge sort agg spark value slow stream a fast line group key fast key line small small sort hash batch group scan batch batch part part stream', 242, 3, 1),
-      ('https://synth.example.org/doc/43', 'html', 'order group vector fast scan key row merge window spark batch the slow window line key line table part query key a row group sort key join value part slow order column merge order spark key sort query fast filter filter fast a filter a row key table small group big line the stream stream a group query customer line sort hash table fast stream key vector window slow table order window filter key scan vector', 409, 3, 1),
-      ('https://synth.example.org/doc/430', 'html', 'the agg stream slow big slow part merge table window key batch a join query row vector small merge hash vector value column order order query batch part a batch value vector sort key value big big data hash column value vector data agg order the vector data row big merge small part value query table', 300, 3, 1),
-      ('https://synth.example.org/doc/431', 'html', 'column batch scan query a window scan query order order table small filter query part fast group the spark batch batch merge window sort value vector scan table line column stream a key line table the part value hash fast slow window the line join row filter group line order hash the column group sort key a fast small spark sort batch query vector', 349, 3, 1),
-      ('https://synth.example.org/doc/432', 'html', 'column window a sort line sort key vector query spark order query value big spark big scan stream row hash hash a key stream stream column batch part hash key spark table customer sort vector data group join data a slow vector part fast batch the column group query small the line', 280, 3, 1),
-      ('https://synth.example.org/doc/433', 'html', 'merge spark scan filter join order line window slow sort spark window data hash filter merge scan the hash customer window a fast agg table a table vector group vector join slow line row window order line data join query small scan join part scan column query key customer slow a line window filter key table filter filter stream big line table customer key fast column a filter table sort query part a slow join stream line hash join', 434, 3, 1),
-      ('https://synth.example.org/doc/434', 'html', 'a table batch filter agg vector query column batch big data group group slow table fast slow sort the data table key vector column value value data column the table window filter stream agg table line spark row scan table stream data group sort group part key order table big table batch agg part big a sort stream value scan window slow data hash key customer stream query scan', 378, 3, 1),
-      ('https://synth.example.org/doc/435', 'html', 'stream customer agg column a column order data query join slow agg scan agg scan the line big a window window a line part big query column window hash big the filter merge order data scan stream batch line line merge small customer data column key data spark row spark filter a stream query data hash a column stream hash big filter small batch slow order window small key line sort slow fast query order value key data small hash key', 434, 3, 1),
-      ('https://synth.example.org/doc/436', 'html', 'data line slow stream order hash vector data slow sort', 54, 3, 1),
-      ('https://synth.example.org/doc/437', 'html', 'stream part table query a fast line filter line merge a filter merge filter small stream data query window sort window value query line value agg a window a row stream filter line line batch query slow scan key order order sort small value group customer line slow query table fast spark line table the part spark sort big table scan window sort row scan data fast data order key merge big window slow hash scan spark vector big order scan big', 443, 3, 1),
-      ('https://synth.example.org/doc/438', 'html', 'value value value spark value filter order merge fast batch sort query table spark data line key order spark big part vector a window merge the big merge the big value slow join stream a vector row table', 203, 3, 1),
-      ('https://synth.example.org/doc/439', 'html', 'batch agg big merge key scan small customer key small batch vector data agg sort group small row big merge query customer the order order join fast slow big customer slow small table fast', 187, 3, 1),
-      ('https://synth.example.org/doc/44', 'html', 'customer batch a scan merge order row group order order customer order fast row fast hash merge sort data window order order batch line value column merge merge query table scan column batch window merge hash a key order hash', 225, 3, 1),
-      ('https://synth.example.org/doc/440', 'html', 'scan scan window vector fast key table batch window sort the line stream sort data filter group value data hash the small sort small vector merge group merge filter a value part part column hash agg key join table part spark line big column join row filter spark vector filter window spark big join hash line window hash table batch merge spark column window row hash value line stream data merge join table scan the filter fast merge small value scan group scan', 462, 3, 1),
-      ('https://synth.example.org/doc/441', 'html', 'vector batch hash hash line data row filter vector stream hash data scan batch small vector slow key part batch spark value merge value value fast sort window column join join customer line filter row vector group vector data line column batch order sort batch small filter batch order batch big stream batch big data data a part group merge sort value table scan group stream batch window column line sort agg hash key', 419, 3, 1),
-      ('https://synth.example.org/doc/442', 'html', 'slow stream the fast key data spark customer slow spark fast sort row merge query row', 85, 3, 1),
-      ('https://synth.example.org/doc/443', 'html', 'vector data the line order part row order window key key scan query key a batch agg part join a a window fast order hash query scan table line the value line customer join group window spark fast table table spark a batch agg merge key line order part line query window fast line customer spark window line group line data data value key scan part batch table join', 364, 3, 1),
-      ('https://synth.example.org/doc/444', 'html', 'value table fast spark column customer batch stream table row row sort row key big small column join fast big spark agg hash spark vector part query spark window customer part big sort scan line order agg query value fast hash query spark spark customer scan row hash part slow join join vector value vector vector scan vector a a key spark filter fast slow window key order stream scan a row group hash hash the column', 419, 3, 1),
-      ('https://synth.example.org/doc/445', 'html', 'part group group the query table merge a big window a a vector', 62, 3, 1),
-      ('https://synth.example.org/doc/446', 'html', 'hash slow filter vector fast merge stream line data line key scan merge data data slow the query big stream customer data scan join spark agg fast spark sort row order merge scan agg fast spark query big slow the filter data batch scan vector group key merge a big filter value line fast row data hash key small fast data window vector part data line a group value stream key batch a line query the filter query value slow row filter slow data slow slow a sort group join column merge', 484, 3, 1),
-      ('https://synth.example.org/doc/447', 'html', 'query spark big merge merge the window join vector table stream filter key data order big value line', 100, 3, 1),
-      ('https://synth.example.org/doc/448', 'html', 'customer data column hash column key part key query filter line table the line a row big row sort window sort spark slow scan line group value group window agg filter group table stream query value table table row big scan scan window big fast value vector spark sort column line big agg', 287, 3, 1),
-      ('https://synth.example.org/doc/449', 'html', 'window hash column sort stream the spark vector stream spark customer group hash small the stream join sort batch hash column fast window slow scan part spark window slow', 170, 3, 1),
-      ('https://synth.example.org/doc/45', 'html', 'order big customer agg filter part group group slow group order sort hash scan sort row row part small spark batch small value query part slow join window window dup', 165, 3, 1),
-      ('https://synth.example.org/doc/450', 'html', 'value key sort customer join agg row hash the group big table small query line fast sort group small filter part vector a fast row data part join table line small filter big a slow key scan small row batch a agg', 211, 3, 1),
-      ('https://synth.example.org/doc/451', 'html', 'the part sort sort table filter spark slow the hash vector stream small merge stream stream sort column table fast hash vector query data a data order data spark small scan group hash customer merge line value agg order fast big query customer window table filter vector batch small hash hash merge filter big batch a slow query spark hash data slow line big order slow query filter data slow the key group vector sort', 418, 3, 1),
-      ('https://synth.example.org/doc/452', 'html', 'big window customer batch row fast a line sort slow hash table slow part filter row slow order fast sort table column filter query line row customer small query fast filter the small slow scan column agg', 203, 3, 1),
-      ('https://synth.example.org/doc/453', 'html', 'big row a stream group column scan join window spark merge group sort a slow group data part spark customer scan order filter fast window key query fast scan customer row column fast scan order row slow hash customer part data filter column order row the hash batch the a customer data join slow small vector customer stream part agg value part value big window vector hash big vector sort row the agg fast spark order merge a fast merge window key key sort sort window value', 475, 3, 1),
-      ('https://synth.example.org/doc/454', 'html', 'spark order stream small small merge data filter key fast stream hash small slow column small stream group fast big a column hash query line column small group a part batch window batch big agg value stream merge join agg slow group agg value hash key slow key order the sort order a big', 287, 3, 1),
-      ('https://synth.example.org/doc/455', 'html', 'slow line window big part data spark merge spark value vector query', 67, 3, 1),
-      ('https://synth.example.org/doc/456', 'html', 'fast small row the row sort fast data stream a join vector batch line column customer data table filter filter query column line column data key fast filter slow group vector data key agg line line agg the big scan scan', 219, 3, 1),
-      ('https://synth.example.org/doc/457', 'html', 'scan line batch join table the stream data group join merge fast row merge small join key data batch the scan stream spark scan the big value customer merge join big line the vector query a merge batch filter merge order stream batch small data order slow join spark merge fast slow scan fast group the small small small spark batch value order the key sort fast join the group spark join value merge spark stream stream join column query vector data part line group vector table hash customer column', 500, 3, 1),
-      ('https://synth.example.org/doc/458', 'html', 'key fast scan hash customer stream data table merge data scan agg scan key stream vector row column a stream vector column group row column sort customer scan query data big key line merge big key key group fast customer sort spark filter value stream batch sort agg fast line part the data column', 297, 3, 1),
-      ('https://synth.example.org/doc/459', 'html', 'customer table filter hash vector order group part join line fast data line small key stream column small filter spark group order fast small line data batch hash spark slow table stream group slow spark row a sort slow a key part batch line join window table part hash big data order slow window scan data key filter join row spark the group join big vector spark slow data stream data data query the column part vector column small', 433, 3, 1),
-      ('https://synth.example.org/doc/46', 'html', 'data row big window scan batch part a fast customer join hash agg customer customer stream join column part slow small line a scan key agg merge a stream line data fast', 168, 3, 1),
-      ('https://synth.example.org/doc/460', 'html', 'key agg window column vector the merge a group hash merge group slow spark fast filter value stream customer part value key batch big part hash stream query query line slow join a slow join table order value spark line key the key stream the part spark customer row vector the batch row sort small sort big filter a', 315, 3, 1),
-      ('https://synth.example.org/doc/461', 'html', 'order agg vector group data the value table slow a vector key stream join', 73, 3, 1),
-      ('https://synth.example.org/doc/462', 'html', 'row vector table vector fast row part spark fast batch batch sort key scan small value window a row agg stream customer slow hash sort filter customer window line hash filter customer order window batch a small table fast hash fast part small the value order a order order group hash', 283, 3, 1),
-      ('https://synth.example.org/doc/463', 'html', 'order the group hash window stream slow group filter data big key filter row sort big data customer agg column slow a small window', 130, 3, 1),
-      ('https://synth.example.org/doc/464', 'html', 'slow table filter value value customer slow order key vector data filter table stream value slow fast customer stream a data hash query order sort order filter scan value group window group window value agg batch customer query table value filter query sort data query order merge order row line table key window order order fast small big sort window row fast column spark data batch group sort filter batch hash fast window value batch line line agg the', 455, 3, 1),
-      ('https://synth.example.org/doc/465', 'html', 'stream agg part line column merge agg line big customer query batch slow slow hash merge vector agg batch scan row query scan query fast a part customer fast vector data query table batch filter customer merge key spark stream customer slow join query merge hash order order slow line vector group slow sort window join small customer column group small part order small stream window hash vector column hash table vector column row merge query hash join agg a', 460, 3, 1),
-      ('https://synth.example.org/doc/466', 'html', 'merge filter spark query data fast scan slow part value stream line column scan order part spark stream hash query table query table', 132, 3, 1),
-      ('https://synth.example.org/doc/467', 'html', 'merge table column a customer scan order customer window join small line batch big slow table filter a column stream window line big filter query row order agg hash part hash window filter scan stream scan merge key data the window hash small window stream column query the merge fast merge scan a agg join hash column fast order value part small group slow spark vector hash line agg hash part data spark group part line column order fast a spark fast order sort vector a table small spark data scan a hash spark dup', 517, 3, 1),
-      ('https://synth.example.org/doc/468', 'html', 'customer spark merge order table data join group line line data filter batch slow group fast column the value query filter small group column agg small customer value order column column merge merge small row small row group part table the window row data batch window merge join fast agg key customer small small line customer value line agg part big small join group merge column merge hash column merge key order batch', 421, 3, 1),
-      ('https://synth.example.org/doc/469', 'html', 'batch customer agg vector small group join vector join row small group group a small batch agg small small filter batch big vector column key row agg data window merge filter slow merge window query table merge query stream the stream sort filter window slow small vector agg slow the value line vector window customer hash scan table stream small batch small big sort slow query order column filter line group line stream scan query value sort merge stream merge key merge column merge vector big data', 502, 3, 1),
-      ('https://synth.example.org/doc/47', 'html', 'data batch agg big key table vector fast sort vector stream column group join the merge slow sort part order key join stream query customer a the a window row', 158, 3, 1),
-      ('https://synth.example.org/doc/470', 'html', 'table fast scan agg customer fast small table hash fast agg sort join big order hash hash customer hash join customer scan slow a line filter key value spark customer small order scan query vector filter filter order row window filter filter table value sort big table a data value slow batch data query group filter', 316, 3, 1),
-      ('https://synth.example.org/doc/471', 'html', 'join column merge part hash scan agg the slow customer data sort filter filter sort a customer agg part window group fast stream spark hash stream group merge part the scan scan merge spark line join sort line hash key spark filter small value a vector stream join batch small a a data big stream spark sort merge customer filter filter line window small', 354, 3, 1),
-      ('https://synth.example.org/doc/472', 'html', 'scan column group merge scan big data column hash customer filter key scan key agg query stream column the agg', 110, 3, 1),
-      ('https://synth.example.org/doc/473', 'html', 'order key part part spark customer stream big data scan order customer slow spark slow scan group big the batch scan scan line small scan order customer data customer merge value group window a customer stream order the join group group batch row line spark row scan batch query table table column scan vector hash order order spark filter sort part big key query scan column key join window hash line sort merge table key query hash value a part', 446, 3, 1),
-      ('https://synth.example.org/doc/474', 'html', 'fast table key query query customer batch slow table vector slow value hash data query batch query vector agg part small line a key agg key small row a hash value fast fast batch order spark window key data group line fast row merge stream the vector customer spark window sort spark agg join vector table key agg join part spark a order group stream scan window group key line sort sort merge row scan a part group filter group vector key group big line agg vector line part fast fast column query table customer dup', 517, 3, 1),
-      ('https://synth.example.org/doc/475', 'html', 'data key order a table filter hash big row table query big scan part join part sort fast table a key order the part group group sort merge merge key line agg filter sort hash order column value sort join join sort value table scan small small table join line window sort fast sort small row order customer sort big table filter batch spark join scan row vector', 360, 3, 1),
-      ('https://synth.example.org/doc/476', 'html', 'window stream customer data window data sort batch sort vector window small merge customer stream big window scan a stream join line agg stream order sort spark vector filter batch slow part order stream data hash the sort query group scan stream query query query join filter order slow agg spark part a hash value value spark scan stream batch a table customer a order filter vector key window scan the customer value value customer', 434, 3, 1),
-      ('https://synth.example.org/doc/477', 'html', 'a batch filter spark big batch hash fast window spark the a order big the small scan join line data stream customer stream the value column merge batch scan filter table vector the hash the join data stream spark spark filter part window agg fast key key window agg hash sort vector join vector small the customer spark data join sort the spark key part a stream value', 368, 3, 1),
-      ('https://synth.example.org/doc/478', 'html', 'data big spark column customer filter scan customer table fast row fast join group key stream the group agg data fast key stream merge sort filter join batch a sort part the small query vector filter filter merge data', 217, 3, 1),
-      ('https://synth.example.org/doc/479', 'html', 'order slow scan stream query fast slow row small batch slow slow big spark line row column join line batch vector sort big key hash stream batch window column customer table filter small value join merge a slow key sort column row merge', 236, 3, 1),
-      ('https://synth.example.org/doc/48', 'html', 'hash merge key value a group stream stream column scan big order fast the merge the sort hash column vector scan hash window stream big slow hash filter filter a customer batch spark fast vector key value customer order window part merge', 237, 3, 1),
-      ('https://synth.example.org/doc/480', 'html', 'part query agg table column hash value batch vector a slow', 58, 3, 1),
-      ('https://synth.example.org/doc/481', 'html', 'group customer table slow spark spark order stream a vector merge row batch agg stream scan spark sort group join column value column the column the value query table a stream batch group batch filter key fast small batch fast line small group line value sort window value stream column agg the spark the line line query spark scan scan agg hash data big merge agg part join big key merge scan vector merge fast merge scan line window customer fast merge spark merge fast query customer agg value batch filter', 509, 3, 1),
-      ('https://synth.example.org/doc/482', 'html', 'column fast group slow small group data column value key fast vector filter data join merge agg hash key group stream column slow slow value query slow slow group query filter stream sort stream batch batch merge spark query table line query a sort value window query table value column order fast small fast scan small vector fast scan filter slow', 348, 3, 1),
-      ('https://synth.example.org/doc/483', 'html', 'filter small group vector merge part customer stream scan column stream customer filter scan the a fast value data scan query hash part query customer column group value data data a a row part scan the join big big agg sort line slow vector hash key key column key slow the big slow value line agg a join value spark column small scan vector window part a small window merge hash', 379, 3, 1),
-      ('https://synth.example.org/doc/484', 'html', 'window customer agg the column line group group column big fast slow part filter join query spark sort agg part merge customer agg batch group sort agg hash hash join customer a join small sort customer value fast batch part', 224, 3, 1),
-      ('https://synth.example.org/doc/485', 'html', 'key table row sort stream order spark order group order line sort group stream table big vector merge line order sort fast key table stream a row line the column group value scan key hash order fast agg line row big a spark line the customer filter vector key small batch column row a line data filter big a group group column value merge line hash sort table group stream value column filter batch merge big table merge query slow order a customer key stream filter agg data part value slow agg column big fast filter hash batch', 529, 3, 1),
-      ('https://synth.example.org/doc/486', 'html', 'big filter big column join hash line agg order fast window row fast value vector slow data big filter fast key merge stream big big small merge window spark group agg row key row fast window vector part small value a stream the small query agg row big row merge a order customer row row stream big a stream part group vector query hash data batch merge join value a stream slow part fast customer stream key vector slow row line line window batch merge small table order customer small agg join merge small query', 512, 3, 1),
-      ('https://synth.example.org/doc/487', 'html', 'order big customer agg filter part group group slow group order sort hash scan sort row row part small spark batch small value query part slow join window window', 161, 3, 1),
-      ('https://synth.example.org/doc/488', 'html', 'merge sort data query query stream table vector order hash table batch value row the value group small value sort batch filter value sort key the part batch spark group batch row customer table query batch stream sort the order group big sort key filter small a join merge big data fast value data a query order big key big spark join key table vector stream query big big', 372, 3, 1),
-      ('https://synth.example.org/doc/489', 'html', 'query join value a column hash order data row part window value hash agg filter column the row order', 100, 3, 1),
-      ('https://synth.example.org/doc/49', 'html', 'hash line scan order spark row spark vector small column big a spark spark part agg sort batch big query join table value batch a group window scan spark column window vector merge customer the big a scan group row the order customer stream group stream data spark vector join part hash the sort big stream query key a row data spark window fast query window window table fast the filter', 387, 3, 1),
-      ('https://synth.example.org/doc/490', 'html', 'line part join vector slow the value fast batch query', 53, 3, 1),
-      ('https://synth.example.org/doc/491', 'html', 'merge part the key hash small join part key window join row order fast the data value key column merge agg key spark data spark column small key hash sort merge column key line hash slow join small customer stream key scan join value data fast hash', 248, 3, 1),
-      ('https://synth.example.org/doc/492', 'html', 'stream part sort stream slow scan vector row slow column line big table a line small fast sort window spark scan join data key the part sort value order data group column group merge key agg slow small order big agg scan table group scan fast line row table key big value fast batch group stream group value small agg value', 323, 3, 1),
-      ('https://synth.example.org/doc/493', 'html', 'order small the a sort join fast merge stream value the the a agg spark line the batch', 86, 3, 1),
-      ('https://synth.example.org/doc/494', 'html', 'sort column small merge part column order filter slow join merge small customer the fast slow small a the stream group key join order key query key the join window merge small part big big stream part value fast vector merge part window slow the order slow order spark small row line order scan the key fast agg data group merge window scan merge merge stream customer column vector line a a fast the row part part slow column small scan big part', 446, 3, 1),
-      ('https://synth.example.org/doc/495', 'html', 'merge fast row table vector merge join slow batch scan group merge spark table part a small', 91, 3, 1),
-      ('https://synth.example.org/doc/496', 'html', 'data small vector table data part query join fast customer sort key window join key order a value small column vector hash batch table sort table', 145, 3, 1),
-      ('https://synth.example.org/doc/497', 'html', 'batch spark the fast customer row merge spark table vector stream batch window', 78, 3, 1),
-      ('https://synth.example.org/doc/498', 'html', 'fast table key query query customer batch slow table vector slow value hash data query batch query vector agg part small line a key agg key small row a hash value fast fast batch order spark window key data group line fast row merge stream the vector customer spark window sort spark agg join vector table key agg join part spark a order group stream scan window group key line sort sort merge row scan a part group filter group vector key group big line agg vector line part fast fast column query table customer', 513, 3, 1),
-      ('https://synth.example.org/doc/499', 'html', 'fast column small filter filter query the window scan vector merge column filter hash stream column window join column hash stream small table query data hash row big slow agg merge batch data group merge query stream value sort agg big order group big value', 258, 3, 1),
-      ('https://synth.example.org/doc/5', 'html', 'value key sort customer join agg row hash the group big table small query line fast sort group small filter part vector a fast row data part join table line small filter big a slow key scan small row batch a agg dup', 215, 3, 1),
-      ('https://synth.example.org/doc/50', 'html', 'the fast key order sort table scan merge part window small hash scan join order batch batch batch stream spark window window', 124, 3, 1),
-      ('https://synth.example.org/doc/51', 'html', 'fast join stream slow spark batch data big part order data part spark merge sort slow key big customer hash stream agg small hash column merge scan sort row value order agg sort big slow key value value data', 207, 3, 1),
-      ('https://synth.example.org/doc/52', 'html', 'spark batch merge column agg group window customer agg part column hash customer row big data customer agg spark stream query merge scan small join small batch window value table key order scan group hash sort fast vector value table batch', 239, 3, 1),
-      ('https://synth.example.org/doc/53', 'html', 'slow query hash customer a join spark window join vector window part agg query order join slow vector big part spark row line big slow slow query line part stream part vector sort query key part scan window agg key the agg agg window customer part line part value value row fast merge the the scan sort spark sort hash agg slow agg agg small big stream join column', 364, 3, 1),
-      ('https://synth.example.org/doc/54', 'html', 'big value scan part part hash filter big part big part spark scan fast join group slow stream filter vector stream the table agg big query column the part the value line hash batch filter data hash value join part filter join join line query hash join slow filter line table join data merge part order small column batch part slow group scan vector vector group agg join the scan part window slow part filter line a stream row small hash agg fast column window scan window window part stream', 491, 3, 1),
-      ('https://synth.example.org/doc/55', 'html', 'vector customer part slow sort line fast a query table scan customer line big order query fast order small hash agg slow value column merge value column vector table merge table window stream big sort customer vector order merge stream the vector merge join group spark', 269, 3, 1),
-      ('https://synth.example.org/doc/56', 'html', 'hash row customer query customer order fast vector column hash stream window order key order customer key batch stream scan sort big scan a a key spark sort data agg fast data scan column stream group key column window sort agg hash column filter group key spark the key vector table batch scan value customer dup', 313, 3, 1),
-      ('https://synth.example.org/doc/57', 'html', 'vector data filter slow column vector fast small slow merge vector table part small agg', 87, 3, 1),
-      ('https://synth.example.org/doc/58', 'html', 'small stream table join the vector row fast vector small column query merge scan sort fast group join', 101, 3, 1),
-      ('https://synth.example.org/doc/59', 'html', 'small fast a customer key merge agg spark line slow stream agg spark batch a fast filter order part small the query merge spark filter batch group query fast part query part vector column a scan merge agg stream merge key window query order join join a big batch spark sort value fast join merge group query fast the data stream table slow column group window scan', 364, 3, 1),
-      ('https://synth.example.org/doc/6', 'html', 'merge data table sort the table query table the order batch window filter column fast the small big part vector merge the customer big sort customer line group hash filter fast batch value line group a vector part join batch fast merge a row data stream window join part spark slow line spark line small big spark merge data filter vector column query fast filter scan hash part agg merge value column part table value line key merge slow vector agg sort slow group group sort', 476, 3, 1),
-      ('https://synth.example.org/doc/60', 'html', 'fast scan hash filter batch window merge big big vector value agg small data scan a query hash window fast row order part sort agg row data value group sort spark row stream customer value query order line sort sort a batch table row part slow customer customer line window value hash line merge a hash join join sort line join spark hash slow filter group agg key row batch filter scan customer query join line', 411, 3, 1),
-      ('https://synth.example.org/doc/61', 'html', 'join stream a row part data data merge value window value value row hash the data slow stream the small hash a slow part part agg a agg query scan data slow filter column join', 175, 3, 1),
-      ('https://synth.example.org/doc/62', 'html', 'vector customer the group group spark value batch key big order vector batch scan table vector sort merge key window fast order join slow small window agg data vector agg customer agg window small merge group filter query filter merge join key customer data line sort', 267, 3, 1),
-      ('https://synth.example.org/doc/63', 'html', 'merge query key part vector sort spark big batch stream scan key big group the value sort key stream order join batch vector slow filter batch vector agg slow row row group data agg table the slow value key join group customer value vector value fast spark sort value order filter big filter vector part key hash line line scan filter fast vector row a scan vector part group fast value join data row sort', 405, 3, 1),
-      ('https://synth.example.org/doc/64', 'html', 'merge join scan line key scan query merge sort filter slow filter agg filter part hash a row a key sort slow fast customer scan customer slow batch sort sort small a', 165, 3, 1),
-      ('https://synth.example.org/doc/65', 'html', 'spark window fast filter slow key row sort table agg batch stream key the customer small', 88, 3, 1),
-      ('https://synth.example.org/doc/66', 'html', 'customer filter group sort sort spark merge key a agg scan stream row agg order query value scan line small slow a filter window', 128, 3, 1),
-      ('https://synth.example.org/doc/67', 'html', 'part part big key join query slow vector row data order batch table order fast window line column value customer line value filter small group sort a group agg merge window group stream column big scan scan value group small table data part value order the slow part agg the value agg small vector group part window window value value group filter spark table value', 365, 3, 1),
-      ('https://synth.example.org/doc/68', 'html', 'the key agg scan table the sort big join line key value a a data agg stream slow small fast part query line column slow small column', 132, 3, 1),
-      ('https://synth.example.org/doc/69', 'html', 'merge filter fast the data big slow customer value group group small', 68, 3, 1),
-      ('https://synth.example.org/doc/7', 'html', 'hash scan a spark hash column slow merge window group filter row stream order a vector window filter scan query group slow query value column batch big big window table table table the agg agg scan order query join batch value a merge key', 238, 3, 1),
-      ('https://synth.example.org/doc/70', 'html', 'window a slow hash small stream sort hash data batch key stream query column big line group spark vector big value stream batch part customer line the agg key the key sort big scan the column key scan data query data', 216, 3, 1),
-      ('https://synth.example.org/doc/71', 'html', 'column part scan part a stream order small order scan batch agg key merge slow agg merge group window spark agg table spark batch a row group row sort the stream column value key filter join data big stream column fast fast vector row part big filter order agg table window query filter scan', 291, 3, 1),
-      ('https://synth.example.org/doc/72', 'html', 'data key part filter row slow join group customer query value hash row filter batch merge customer order query stream stream big vector hash scan column order sort sort value scan filter key batch table agg filter window part data batch join key a window line slow key hash slow table a stream small fast slow key line big slow batch group a row line small part window join merge big hash agg window fast hash batch spark window join window row join agg stream agg table', 470, 3, 1),
-      ('https://synth.example.org/doc/73', 'html', 'table vector the scan customer row line line line batch agg row part vector the hash hash', 89, 3, 1),
-      ('https://synth.example.org/doc/74', 'html', 'join column the slow stream column filter hash agg value sort group key row', 75, 3, 1),
-      ('https://synth.example.org/doc/75', 'html', 'fast sort batch small agg stream group data vector small group big group a line a row value group sort customer hash slow agg agg the vector group sort sort sort scan query hash customer part table small data merge fast part', 224, 3, 1),
-      ('https://synth.example.org/doc/76', 'html', 'big merge spark batch join group stream the customer sort stream key merge filter order the stream the query column table window part table sort data window small data group vector small key order value key the query stream window agg line filter group group sort a join batch data hash window the line group', 308, 3, 1),
-      ('https://synth.example.org/doc/77', 'html', 'customer table filter hash vector order group part join line fast data line small key stream column small filter spark group order fast small line data batch hash spark slow table stream group slow spark row a sort slow a key part batch line join window table part hash big data order slow window scan data key filter join row spark the group join big vector spark slow data stream data data query the column part vector column small dup', 437, 3, 1),
-      ('https://synth.example.org/doc/78', 'html', 'column join batch fast merge the data the scan filter data query query big order a vector filter a a part slow query order', 122, 3, 1),
-      ('https://synth.example.org/doc/79', 'html', 'spark sort order scan the a batch data order part sort scan scan key big filter small window part the part small data query spark query order column line value table column value spark the sort group sort merge a batch', 218, 3, 1),
-      ('https://synth.example.org/doc/8', 'html', 'small big order scan fast sort a value stream fast join column big line value value filter merge data a part filter big line group line agg hash hash query spark sort slow hash order query order sort column small part order the join order hash small data slow group spark window join big stream join the a group table column filter sort merge filter table join key part the sort part join table agg dup', 402, 3, 1),
-      ('https://synth.example.org/doc/80', 'html', 'fast value small scan window hash row stream sort part query order agg slow query filter part a fast value scan row column a customer group merge a merge customer join group sort fast key column big merge fast customer sort the batch merge group the table scan sort sort a the batch line data spark query agg agg window group data part vector part stream batch small filter column hash merge column hash small batch table row window column big key data agg slow sort big', 470, 3, 1),
-      ('https://synth.example.org/doc/81', 'html', 'agg filter hash order merge fast group group part fast batch sort agg table join a a table sort line line agg part the the join customer key join agg a query customer sort batch agg key line filter part window order spark stream value spark a batch row the sort part stream slow group window hash filter query slow sort stream hash part batch line sort value column line fast key big agg spark batch query customer join value query big table the filter spark window table merge join fast the value line order data a filter', 522, 3, 1),
-      ('https://synth.example.org/doc/82', 'html', 'the fast key order sort table scan merge part window small hash scan join order batch batch batch stream spark window window dup dup', 132, 3, 1),
-      ('https://synth.example.org/doc/83', 'html', 'filter agg row join join column column row vector window big column scan slow hash group order scan row a part merge line vector sort order agg order part window column part row small query agg join key row big customer fast stream customer a small agg table order fast hash slow agg hash scan spark value part part agg part stream batch big big key agg agg merge stream stream stream part scan slow vector fast spark batch slow a batch', 436, 3, 1),
-      ('https://synth.example.org/doc/84', 'html', 'query scan table window part column big column scan window big order group big', 78, 3, 1),
-      ('https://synth.example.org/doc/85', 'html', 'stream filter filter vector hash fast batch a agg fast fast sort group key spark small fast column sort customer part filter a line the sort value spark column spark fast hash sort customer a stream line filter line line small slow small row value the sort group spark spark sort column stream query group batch hash slow join stream vector data column fast a column join spark line hash hash row line query line vector the window merge group fast table query agg stream a', 472, 3, 1),
-      ('https://synth.example.org/doc/86', 'html', 'part customer merge sort table column group big table hash the window line spark fast small row customer scan filter column row agg group column customer filter part join order customer column fast agg batch row big small row merge window small small small sort part table order stream column sort stream join stream part scan sort agg', 335, 3, 1),
-      ('https://synth.example.org/doc/87', 'html', 'sort part batch scan table filter window data scan the filter fast join join part hash order row part column big customer query agg big row column slow filter order spark table part join vector vector join filter batch window filter agg part vector slow group table merge line line merge window column slow vector stream hash spark agg spark agg value slow row hash slow slow table a spark key table sort window customer merge', 426, 3, 1),
-      ('https://synth.example.org/doc/88', 'html', 'query slow table group scan the filter big group customer small value spark slow hash fast the agg group spark line join hash big group value key data value data fast big window hash query hash row data table small window agg data a window batch the key group window agg value group value agg the part filter spark value batch key sort scan hash a table key hash data stream slow column fast merge column part value batch a a spark part batch scan agg order a dup', 463, 3, 1),
-      ('https://synth.example.org/doc/89', 'html', 'table query row join data batch group scan line agg data value scan data sort', 77, 3, 1),
-      ('https://synth.example.org/doc/9', 'html', 'customer stream value key customer customer window slow row filter scan filter customer slow agg vector sort hash vector hash query a big the scan stream column the hash row table stream column spark line spark', 210, 3, 1),
-      ('https://synth.example.org/doc/90', 'html', 'column order column stream line merge big column a agg batch the slow merge vector query window big sort table batch fast part stream slow window line table vector data order join customer join a merge customer scan group slow group filter column slow the row batch customer filter part stream fast join join column filter small merge table table data hash vector customer window data stream big hash group sort data key slow table sort', 436, 3, 1),
-      ('https://synth.example.org/doc/91', 'html', 'vector part batch row fast query spark data join scan the scan', 62, 3, 1),
-      ('https://synth.example.org/doc/92', 'html', 'query the batch scan key big small a the hash slow batch big the sort query key fast line a data the query small fast big', 121, 3, 1),
-      ('https://synth.example.org/doc/93', 'html', 'batch key spark spark key key the the data big a line filter value batch slow query filter group vector hash order the batch hash filter key agg spark the the window part value vector column row the batch value sort row part stream stream group agg fast join query scan batch stream column value join scan group scan part value query join hash big vector key filter hash agg value order a order group a group join spark stream hash table', 437, 3, 1),
-      ('https://synth.example.org/doc/94', 'html', 'vector filter filter scan customer merge join a big line vector scan order query big stream data hash the scan vector filter merge agg filter join customer vector customer group window window slow merge window order fast data line a customer batch line line hash customer', 271, 3, 1),
-      ('https://synth.example.org/doc/95', 'html', 'filter agg big the big order the slow spark join hash slow window key column spark filter the table order a value merge spark window scan window fast query vector a spark group order customer merge sort the query data order stream column filter merge window column', 264, 3, 1),
-      ('https://synth.example.org/doc/96', 'html', 'spark spark part line group spark row merge value window small sort data sort big vector key value small a agg part merge merge spark join agg big group vector key group data join big stream window the the filter stream order scan value value data small scan join merge join big customer customer data fast part filter group fast column sort spark spark agg big', 361, 3, 1),
-      ('https://synth.example.org/doc/97', 'html', 'customer big small hash row value vector merge merge window vector window query batch part fast hash scan spark customer stream agg hash part order fast join value join fast agg group column slow table the data window a hash slow spark batch line small small vector group a group merge merge data column merge data column group the column line', 343, 3, 1),
-      ('https://synth.example.org/doc/98', 'html', 'vector row agg a big row agg vector stream window stream hash small join query part filter hash data query a row query value big key value query big merge hash key join table vector sort value group a merge agg sort a key filter fast the agg batch join spark sort big key window scan vector key spark hash order big merge value fast data join agg order merge window batch merge fast column fast big a sort value small customer sort big group', 441, 3, 1),
-      ('https://synth.example.org/doc/99', 'html', 'merge customer join spark scan stream merge agg sort hash row big value agg line order table data slow hash vector table table hash the key group slow spark spark key sort row key column join scan hash group join customer batch line filter small hash hash small customer customer customer value part value data order order order data sort row window data data filter the the spark table sort query data line spark fast value the window spark group vector slow order batch value dup', 481, 3, 1),
-    ],
-    149174: [
-      ('https://synth.example.org/doc/0', 'html', 'key agg row scan slow fast table value part hash value table part a row fast merge batch part value fast spark a a the line sort table window table table key', 157, 3, 1),
-      ('https://synth.example.org/doc/1', 'html', 'batch window spark order data column agg join small line customer query line value a table customer fast key scan query big table table part agg order scan stream fast order group value sort column query big query value customer stream window stream sort query line window batch customer join merge value spark part filter query key scan sort a scan spark fast sort key agg query the group line table order', 406, 3, 1),
-      ('https://synth.example.org/doc/10', 'html', 'order scan agg batch a small stream value table merge hash big column group value group small window customer part group group spark hash window window window part merge query agg big query a spark the the join key', 214, 3, 1),
-      ('https://synth.example.org/doc/100', 'html', 'batch data join scan table slow filter filter value filter small group scan key stream column small query a part hash a big customer line batch query sort line customer row row the agg agg group column vector sort filter hash customer the merge order spark big order spark column merge scan stream scan fast big small a vector big scan line the column slow customer slow row row small slow vector scan scan query small vector part sort stream small window query', 461, 3, 1),
-      ('https://synth.example.org/doc/101', 'html', 'table join fast slow query customer join filter data fast batch filter line big vector batch merge group fast vector batch query row merge hash big join window slow fast slow join column agg big big scan row group table customer big', 232, 3, 1),
-      ('https://synth.example.org/doc/102', 'html', 'customer vector key the filter merge hash small filter a key group value hash customer spark row group slow big data the column column big fast vector a join filter scan spark value group query merge group key scan column customer small filter merge a key vector batch order vector value filter merge part stream batch table slow batch hash group a big query the join hash the column join value small key stream order the join vector key scan customer group query customer column scan filter customer data the group', 515, 3, 1),
-      ('https://synth.example.org/doc/103', 'html', 'customer query big batch scan scan big table small filter merge merge filter line scan order value filter join scan batch stream key spark vector the window key window query scan query join table order value vector vector order window join join merge table big value scan merge column group query agg filter merge the agg key fast value join customer merge group sort scan table spark filter order sort join column value key line slow column slow part scan a slow query join spark data big vector group merge order group stream', 527, 3, 1),
-      ('https://synth.example.org/doc/104', 'html', 'row sort value the hash data order merge stream hash window query merge order batch agg spark window window spark group spark fast window data small scan window batch data join table hash agg key batch data spark line small vector batch data data', 246, 3, 1),
-      ('https://synth.example.org/doc/105', 'html', 'the fast column batch value hash filter scan sort window data group group row row fast customer hash vector group filter table part scan part part query query column sort data row window key stream window part data merge key a fast stream table agg vector a column stream fast line column big order the batch sort agg value sort', 328, 3, 1),
-      ('https://synth.example.org/doc/106', 'html', 'small join fast vector join query sort row big order filter slow small', 70, 3, 1),
-      ('https://synth.example.org/doc/107', 'html', 'hash query group row line stream join window key fast query line line line customer a join vector hash key big row data sort small big agg small small customer row order scan vector query filter spark key big dup', 212, 3, 1),
-      ('https://synth.example.org/doc/108', 'html', 'table batch fast table key filter value a table big data filter line data small stream', 86, 3, 1),
-      ('https://synth.example.org/doc/109', 'html', 'part spark line order fast group key column order agg small key batch stream join filter value agg data small column the part join fast a query batch slow data data order value stream small agg join small filter join batch customer vector order small window merge filter sort part window sort fast spark merge group column big fast hash vector table slow column line line order filter fast spark', 395, 3, 1),
-      ('https://synth.example.org/doc/11', 'html', 'the big data merge data spark merge stream part slow part filter sort a part order merge big spark key value merge hash filter small a batch slow key hash slow vector value fast small query hash slow slow join fast line spark vector scan small window group part filter fast data key part line a merge key', 304, 3, 1),
-      ('https://synth.example.org/doc/110', 'html', 'scan merge part agg table key big merge slow row small', 54, 3, 1),
-      ('https://synth.example.org/doc/111', 'html', 'merge merge part agg merge part agg key small spark a batch vector key filter small key line column scan table column vector hash group merge big vector agg query query window customer data slow query slow vector vector small scan table sort value order table key merge spark hash scan scan join group scan part sort order line spark value data merge column big join the part stream value query vector table stream key column group data table vector scan query group window fast query line spark row query filter query value sort', 529, 3, 1),
-      ('https://synth.example.org/doc/112', 'html', 'vector order the scan the vector window batch merge merge key window customer vector big value line the merge customer part join order a filter a sort slow row window table agg batch slow value filter table order sort join batch group line part stream join query value merge row small table table join sort batch scan fast', 322, 3, 1),
-      ('https://synth.example.org/doc/113', 'html', 'scan hash filter line agg batch query the window join big line customer part key part scan column join window vector query hash column big order row query stream big part fast scan customer the big fast sort stream big the sort small window a row join vector column filter a key data big slow the vector agg data filter scan small slow a slow line customer scan line key table merge join customer hash scan vector merge customer', 428, 3, 1),
-      ('https://synth.example.org/doc/114', 'html', 'customer row stream slow customer order fast order a a vector table column hash slow stream key filter filter customer stream line hash hash data fast spark stream slow line small small key batch value table', 207, 3, 1),
-      ('https://synth.example.org/doc/115', 'html', 'row part key vector table customer fast row line scan data value line agg sort vector vector merge key part column order group batch', 132, 3, 1),
-      ('https://synth.example.org/doc/116', 'html', 'small window part customer query filter slow batch query query', 62, 3, 1),
-      ('https://synth.example.org/doc/117', 'html', 'scan group query query a query sort scan slow the hash window value value hash value order merge hash customer line slow part filter hash group data big a stream agg big a key order batch scan merge line value group part scan scan data batch hash', 246, 3, 1),
-      ('https://synth.example.org/doc/118', 'html', 'table stream batch data customer stream agg value part window part key group group big line data column small spark column fast customer a order table merge order stream small scan hash the order small customer the query column filter merge row column sort row key batch agg key agg a data window stream value query sort customer part order the sort data group fast batch merge spark small stream', 396, 3, 1),
-      ('https://synth.example.org/doc/119', 'html', 'column filter agg row agg vector part batch join group scan slow query customer agg the', 87, 3, 1),
-      ('https://synth.example.org/doc/12', 'html', 'batch small fast slow a a order vector scan a group query table query row small sort part customer query small customer big order scan join join value fast hash sort data stream slow agg hash big order line slow row a filter sort order scan scan spark hash slow join big sort small customer join value stream key join fast order slow customer value', 348, 3, 1),
-      ('https://synth.example.org/doc/120', 'html', 'spark column vector stream key line value order big a stream small sort vector row scan column hash a column customer small table query column key row customer query stream batch scan column spark group hash dup', 211, 3, 1),
-      ('https://synth.example.org/doc/121', 'html', 'spark big batch column order value query data value vector fast order key small spark join slow small slow scan query filter the hash window merge customer row agg slow', 168, 3, 1),
-      ('https://synth.example.org/doc/122', 'html', 'customer key customer spark merge slow big the scan stream part a value batch line fast spark sort agg', 102, 3, 1),
-      ('https://synth.example.org/doc/123', 'html', 'the stream order customer big join batch stream data fast stream row fast query fast query data customer filter sort data row agg sort window group the column', 158, 3, 1),
-      ('https://synth.example.org/doc/124', 'html', 'slow agg stream column sort group data stream fast merge query slow query row line table stream spark fast slow key slow merge sort scan filter part filter scan a table line agg spark the sort merge merge query part batch scan small a a join merge query key batch value key data the data slow agg line key small', 311, 3, 1),
-      ('https://synth.example.org/doc/125', 'html', 'fast the join part table order stream slow table order window query merge group scan group big sort big join merge value hash value big small spark line window query a vector slow table', 185, 3, 1),
-      ('https://synth.example.org/doc/126', 'html', 'key hash line the merge customer spark order customer window line a fast batch hash a data fast data key agg join query line column table batch stream customer vector column window order scan stream filter vector column line big agg customer data customer vector vector hash stream filter scan join scan row window hash filter scan part merge query the order big scan a big hash merge hash vector filter slow agg data spark line hash order row window spark row window customer vector hash line key small order', 509, 3, 1),
-      ('https://synth.example.org/doc/127', 'html', 'part small fast table vector table data hash window key scan merge scan small join table key scan big order filter row hash part the batch filter row key sort stream spark hash a spark the key scan stream value small row sort scan table key hash value agg hash big line join table big part big column slow customer merge agg scan hash hash scan row agg stream small stream merge join merge vector query scan table big join sort a line', 434, 3, 1),
-      ('https://synth.example.org/doc/128', 'html', 'value filter hash scan data the batch data stream big hash part data stream row small query slow group agg merge slow key table customer stream batch join table key order line vector hash row order customer batch line line data vector agg key filter row query window fast query spark hash big value line vector vector customer scan order window order key hash filter spark big filter row customer fast vector filter merge a agg line filter merge value the', 455, 3, 1),
-      ('https://synth.example.org/doc/129', 'html', 'filter join the merge spark row merge filter merge value line row filter spark table scan row stream query join data big small batch the group fast sort sort stream stream group group a sort group table order scan agg group merge part merge group big order value hash fast key batch data fast hash big key spark big value table customer part line line order line the value a sort join small agg table small table merge line customer vector', 439, 3, 1),
-      ('https://synth.example.org/doc/13', 'html', 'window query order value query hash agg the small agg fast big window agg agg line small join small spark customer group window slow batch window sort vector stream slow key data batch vector agg merge query merge slow window the batch table small part value part window slow stream stream window small spark merge filter stream batch join vector', 346, 3, 1),
-      ('https://synth.example.org/doc/130', 'html', 'spark table batch window value query line key batch row sort a slow filter agg slow key a column window sort column the slow part agg join stream part', 150, 3, 1),
-      ('https://synth.example.org/doc/131', 'html', 'row merge join slow column order stream scan sort a key row sort merge group column agg join agg order row column scan spark stream value merge filter customer stream table hash data a spark big table batch window join merge data data a join query order filter stream row vector big slow small', 293, 3, 1),
-      ('https://synth.example.org/doc/132', 'html', 'join row small a big a stream line spark the filter part scan column filter hash hash hash group fast line merge table filter merge small vector table part window a slow spark big scan row line column line small data a key table batch data customer part batch key agg row group order small the vector scan small column stream hash', 330, 3, 1),
-      ('https://synth.example.org/doc/133', 'html', 'row customer column table fast key vector small scan join vector batch the hash join part filter window filter query key join data fast group sort slow the a line sort a value table scan a order batch table line row scan data filter line window filter a scan sort hash window group stream group value vector data scan part filter filter group value a sort join the order a data column key the column line order query stream scan batch small fast a part part fast batch the sort stream value sort slow', 500, 3, 1),
-      ('https://synth.example.org/doc/134', 'html', 'query filter vector spark scan part join group batch fast order value slow window order filter row key part group a batch column dup', 132, 3, 1),
-      ('https://synth.example.org/doc/135', 'html', 'merge fast part customer spark slow big stream order stream the customer batch stream group scan table merge sort the spark the part stream line table a table column query hash the group a order order fast agg batch customer vector small stream fast table small hash big a filter hash stream hash value the group slow a agg the slow scan data customer key row line column a group merge hash filter stream join sort spark value group join value customer customer filter column data sort row hash spark small key spark small the query order', 538, 3, 1),
-      ('https://synth.example.org/doc/136', 'html', 'a hash big join line row join merge agg query line value table filter group table merge small merge small fast big sort hash column table agg query row spark join line part vector batch key big stream value spark table line key agg the a stream slow key merge vector vector small batch line filter join sort hash small hash slow query', 334, 3, 1),
-      ('https://synth.example.org/doc/137', 'html', 'line a query stream table column query column spark a a column scan small small value part merge slow row value join agg table join scan order agg table customer line data join window scan sort filter the row slow query filter column', 233, 3, 1),
-      ('https://synth.example.org/doc/138', 'html', 'data filter key filter row data vector join key vector agg column sort key customer a order data fast order filter a window a small stream group part sort data hash fast key window customer sort sort data customer table small agg column query value merge big big key slow batch value hash big the filter group table join vector customer window key sort slow stream', 364, 3, 1),
-      ('https://synth.example.org/doc/139', 'html', 'stream customer small small order order slow a the value agg big part table merge merge query big agg agg big value a the vector big column stream vector line a stream spark a part window spark filter query a customer line agg line query spark join line value data a sort window agg scan stream', 294, 3, 1),
-      ('https://synth.example.org/doc/14', 'html', 'stream small agg the group stream line group group fast group spark column line value customer spark stream spark fast big merge stream fast vector agg batch join window table join row filter value big stream vector slow data filter group row spark data value batch merge customer stream merge group join slow spark hash fast spark filter table vector big batch spark big a vector filter column hash line merge window fast slow row batch join small table join part big filter query agg table key', 495, 3, 1),
-      ('https://synth.example.org/doc/140', 'html', 'group agg big query filter the sort agg value sort window join value big key order line stream merge customer small scan stream group vector merge vector big', 157, 3, 1),
-      ('https://synth.example.org/doc/141', 'html', 'scan a hash key value customer slow query value slow batch table query customer agg value customer agg customer window window hash column spark part filter stream batch group key group value value scan hash stream fast hash table sort hash column query table part line group batch filter order order stream stream query small big query join group batch group row line table line fast small slow data key join scan small value window', 432, 3, 1),
-      ('https://synth.example.org/doc/142', 'html', 'the small query line customer slow filter filter slow a key column vector window order batch a filter customer the the fast join the group row merge slow part scan stream key batch part batch key query customer value small line query vector a line column merge spark filter merge vector sort line big merge the table hash a table value slow the data join stream data customer hash batch order key big fast row merge the row join group a line merge order agg spark value key slow group join vector batch hash hash', 512, 3, 1),
-      ('https://synth.example.org/doc/143', 'html', 'a part filter scan slow spark key vector filter sort sort agg spark a small small group data key query join vector spark small stream column small filter sort query window part window column customer order window vector filter part part stream value vector vector query small filter vector filter row a batch small big data table column data big big agg column merge part row query filter filter order part scan', 411, 3, 1),
-      ('https://synth.example.org/doc/144', 'html', 'column row row the key agg hash spark join batch group row key merge stream part scan key', 89, 3, 1),
-      ('https://synth.example.org/doc/145', 'html', 'slow batch hash filter spark sort order stream data batch slow query table spark row order agg key hash row spark fast data merge customer merge filter join small query line window part line vector stream spark stream join slow fast vector big column filter batch fast part hash slow the data spark sort customer merge the join filter fast batch fast fast agg table data agg spark sort group the spark', 401, 3, 1),
-      ('https://synth.example.org/doc/146', 'html', 'vector spark the merge value vector merge data scan sort spark agg join merge customer line window vector scan stream hash column', 129, 3, 1),
-      ('https://synth.example.org/doc/147', 'html', 'group batch key small value stream hash batch agg customer sort hash window agg a a fast big batch stream big small hash hash slow spark row hash value a hash row slow query order agg column data table column agg row table window fast query hash customer join order a key column part data row row key line line agg stream row hash the stream the agg spark window column order agg merge hash hash vector agg value batch filter spark scan value', 442, 3, 1),
-      ('https://synth.example.org/doc/148', 'html', 'value spark stream merge sort a filter row slow slow small slow fast spark the stream fast small slow batch the stream part key key table merge small value column slow hash stream slow slow the agg', 197, 3, 1),
-      ('https://synth.example.org/doc/149', 'html', 'the row query batch query row spark part data column stream stream agg data part line order window customer table customer batch value batch order small slow', 157, 3, 1),
-      ('https://synth.example.org/doc/15', 'html', 'order merge small table group batch key order customer a small table data column line big batch window query line table filter fast data customer line key line big query small filter vector join table join spark row line key big', 228, 3, 1),
-      ('https://synth.example.org/doc/150', 'html', 'sort join join vector query fast customer part slow spark query part order slow slow key spark table stream order key sort scan batch batch small line customer customer group query slow the join data the slow join batch hash customer big group vector filter order spark part', 274, 3, 1),
-      ('https://synth.example.org/doc/151', 'html', 'stream sort sort sort value agg join agg filter merge spark a group value window merge data agg batch fast big fast batch customer data scan hash row spark batch data big value stream line data the batch column agg scan line part small merge query data customer row a stream filter join batch stream fast spark stream row stream column row table column stream order query filter small small key scan join spark key agg scan query key vector row join window join query the spark key data window filter big query customer', 519, 3, 1),
-      ('https://synth.example.org/doc/152', 'html', 'fast merge row data slow batch agg a small customer stream value agg stream data batch table window table stream column agg scan filter small part stream value customer merge the big scan batch scan a vector vector dup', 218, 3, 1),
-      ('https://synth.example.org/doc/153', 'html', 'column the the slow vector fast fast column group a value small batch small sort window filter filter row agg filter window query order value a stream batch column merge fast a agg vector vector table stream key scan agg group customer value big slow batch part spark line window value vector vector column big key agg window big stream vector a filter vector fast line part spark line batch spark spark fast sort sort line data fast', 433, 3, 1),
-      ('https://synth.example.org/doc/154', 'html', 'sort order value a column slow hash line scan merge the the stream data part big column group slow filter agg group column slow key order line line filter query agg sort slow the big customer order agg the merge column hash hash fast hash hash order slow row spark window vector query value filter part value row fast spark big merge stream group fast group key group sort big data agg table agg table the window filter sort filter join sort a', 443, 3, 1),
-      ('https://synth.example.org/doc/155', 'html', 'window join merge agg value agg query filter the vector order window big a customer row part query join stream key sort batch group key column the line column vector slow merge key a scan data hash agg query part agg fast slow sort merge window hash batch the sort hash group column merge order line merge scan customer key batch customer query a customer vector fast', 367, 3, 1),
-      ('https://synth.example.org/doc/156', 'html', 'hash sort small slow big group order small data hash customer value key fast customer scan order stream window sort vector', 122, 3, 1),
-      ('https://synth.example.org/doc/157', 'html', 'slow hash batch line stream row merge small column big line small join join scan customer a', 91, 3, 1),
-      ('https://synth.example.org/doc/158', 'html', 'hash customer table filter table value group vector small line merge stream group batch hash customer fast', 106, 3, 1),
-      ('https://synth.example.org/doc/159', 'html', 'data table merge agg fast group query part key column window part a customer the value order data merge key slow data small part filter scan vector query key sort data filter sort column key merge group part spark agg batch line batch filter group data part row order query agg line customer small filter data window join data query join query spark big big row join vector spark', 379, 3, 1),
-      ('https://synth.example.org/doc/16', 'html', 'line vector order slow data column fast line batch column key stream query scan table scan', 90, 3, 1),
-      ('https://synth.example.org/doc/160', 'html', 'batch filter the order order a query filter scan stream data the spark big query part stream batch agg merge order scan fast window merge part merge slow vector agg window customer row query join filter agg hash stream hash window customer a data', 246, 3, 1),
-      ('https://synth.example.org/doc/161', 'html', 'fast join key customer the sort table value fast join stream sort row group customer order group query vector big spark table query the column line stream hash the agg customer table join hash row group agg fast fast spark query part agg hash scan merge value batch row key big order window hash line query vector value hash column merge stream join row batch line the batch data batch stream sort query sort join row batch scan line merge hash filter part scan merge spark', 473, 3, 1),
-      ('https://synth.example.org/doc/162', 'html', 'customer window order filter scan vector small a filter row customer fast sort big value line key data slow query agg a merge row query batch scan query scan order table batch filter sort window filter batch the data spark window order agg value big data filter key column merge slow a slow stream key join order customer join the batch sort merge small column table row vector small vector stream scan table agg sort part batch small scan window value small', 458, 3, 1),
-      ('https://synth.example.org/doc/163', 'html', 'row window value batch scan vector agg fast part table sort slow line group table customer slow data row a small scan fast group data filter slow key customer batch filter value vector merge value line fast value stream filter key order customer query group', 257, 3, 1),
-      ('https://synth.example.org/doc/164', 'html', 'key table query part window filter stream column hash big sort hash stream customer a sort batch group query', 108, 3, 1),
-      ('https://synth.example.org/doc/165', 'html', 'slow value spark hash join big merge slow a sort batch big big data part filter key fast hash group customer', 108, 3, 1),
-      ('https://synth.example.org/doc/166', 'html', 'query column group agg filter value query join scan batch a stream filter agg hash order key table hash agg a the a merge sort line order big fast group hash merge order window hash vector the batch slow line scan table table table merge scan fast table scan value the table window line join fast customer join vector fast sort', 327, 3, 1),
-      ('https://synth.example.org/doc/167', 'html', 'key vector stream group spark table hash join window agg the window sort query scan fast filter stream small batch vector merge customer customer order order slow hash stream value vector query column batch column data filter small spark line customer merge table key big spark join hash batch the slow stream a the window hash key row line batch fast a spark spark table the spark stream agg slow key stream vector stream big fast the part slow data filter a scan table line', 475, 3, 1),
-      ('https://synth.example.org/doc/168', 'html', 'small query slow customer slow query join batch stream part fast batch fast a a vector batch stream column spark filter merge filter the hash window customer order row join part fast customer vector value slow sort order value a', 228, 3, 1),
-      ('https://synth.example.org/doc/169', 'html', 'window join value line customer line row customer vector group scan fast part value slow data scan line order window vector spark vector vector the order spark batch group stream customer filter slow agg value line data vector spark customer part merge hash slow customer slow value part value stream a agg stream row a fast batch value window table group join vector filter hash part agg key value', 398, 3, 1),
-      ('https://synth.example.org/doc/17', 'html', 'key a small data filter column part row window table query data value customer slow sort fast stream group line slow order line row query value agg table key value sort data group spark fast hash part row filter hash stream scan filter fast row filter fast vector line filter filter window a key filter sort line the line join filter data customer stream query query key stream batch small row column sort agg vector fast line', 426, 3, 1),
-      ('https://synth.example.org/doc/170', 'html', 'group column batch big customer join batch part column fast batch scan line batch the slow part table query fast window hash', 124, 3, 1),
-      ('https://synth.example.org/doc/171', 'html', 'query big vector slow table slow line window slow vector line slow order query order value big part spark join group join value sort scan spark line window key row group filter hash line data the small agg join customer part row filter scan big fast sort table the the hash join a small scan vector small column table sort table', 328, 3, 1),
-      ('https://synth.example.org/doc/172', 'html', 'sort scan vector stream part scan row agg spark a big big group table customer query table join a query', 103, 3, 1),
-      ('https://synth.example.org/doc/173', 'html', 'group row vector table data value key hash spark join the order filter vector query key filter small merge join agg key big fast sort line scan part batch agg merge hash query hash data sort a window column batch row vector fast agg vector vector window table customer batch line table filter key stream batch batch group batch stream batch order column agg batch part key spark vector window customer the scan stream line value vector column key vector vector batch a vector data join filter a join data agg part window slow sort spark the', 540, 3, 1),
-      ('https://synth.example.org/doc/174', 'html', 'slow row query table agg hash spark line join data stream sort sort sort data window fast sort hash column small table the agg query group sort slow data data window a spark window column sort spark vector small the stream group window slow spark big customer join agg join customer value row merge filter scan data', 315, 3, 1),
-      ('https://synth.example.org/doc/175', 'html', 'group group order fast value sort column window group row query join fast part the the group group group row sort data row customer merge hash table value big', 158, 3, 1),
-      ('https://synth.example.org/doc/176', 'html', 'hash agg a hash big data row value batch stream window row small stream order spark the spark a value data customer line join slow slow big small customer spark spark big batch order value table scan filter value batch filter query customer query stream hash big spark part join line row hash part part vector column order the data small row batch merge data customer hash column order agg agg sort agg value vector stream window merge small key spark filter filter scan hash batch hash hash', 491, 3, 1),
-      ('https://synth.example.org/doc/177', 'html', 'the key query window agg spark table scan window part order merge big sort slow column batch column key a scan batch the big group scan customer part join order hash hash key line fast value join filter line line merge scan merge slow agg order filter small value', 263, 3, 1),
-      ('https://synth.example.org/doc/178', 'html', 'fast merge row data slow batch agg a small customer stream value agg stream data batch table window table stream column agg scan filter small part stream value customer merge the big scan batch scan a vector vector', 214, 3, 1),
-      ('https://synth.example.org/doc/179', 'html', 'key small big data query part column slow join stream spark join data value row vector fast stream hash order vector part join batch spark filter part fast column filter value table slow small query row table order vector vector the part column the row query fast filter fast scan the stream order scan query column row agg stream the slow column order data key customer small order fast hash join batch the row query sort a window fast big stream vector vector small fast table group', 484, 3, 1),
-      ('https://synth.example.org/doc/18', 'html', 'merge small agg slow small value fast hash a sort stream filter filter join big vector join group line key part merge vector row column table filter window scan batch slow row sort spark stream value column stream scan column sort a a fast batch customer stream big key scan order data window filter row scan filter fast filter a table batch value agg order data customer data customer small customer order big window group', 423, 3, 1),
-      ('https://synth.example.org/doc/180', 'html', 'agg query part merge filter customer spark scan table merge sort value row vector fast filter the batch stream part stream part filter vector window batch group big line small the order', 185, 3, 1),
-      ('https://synth.example.org/doc/181', 'html', 'filter part customer the customer table column batch a key part small group join order query filter sort part', 109, 3, 1),
-      ('https://synth.example.org/doc/182', 'html', 'agg key order row vector batch customer the join query group value window spark row fast column hash small a column spark row merge a key merge scan hash vector group data value fast customer vector big row spark the data sort stream big the data fast stream spark small scan line data sort small big filter join agg hash data order group line', 343, 3, 1),
-      ('https://synth.example.org/doc/183', 'html', 'window order join line batch query a join scan vector big a merge merge big line small row agg part', 99, 3, 1),
-      ('https://synth.example.org/doc/184', 'html', 'part a value query key table customer vector agg slow spark key small sort join batch stream query merge group batch line filter part merge data fast the customer order batch sort scan window order value batch join column order small customer key a small hash group batch a agg group order column agg the value order stream order vector a order batch slow table key join customer key group agg group vector join big key hash value scan spark', 441, 3, 1),
-      ('https://synth.example.org/doc/185', 'html', 'merge small small the order agg order table a order vector batch table value query data slow key part agg part table agg filter value slow table table value join slow column join agg table row scan row group batch a slow hash merge group filter big column scan a key batch agg table column agg value batch', 305, 3, 1),
-      ('https://synth.example.org/doc/186', 'html', 'row table query scan vector order sort line a join the sort value order order agg fast row key vector sort spark the small filter merge vector group window query row order query row a vector window a window merge hash vector filter vector stream sort query merge data join big hash sort join row sort group a slow row row spark small big batch value scan query a slow a a slow query agg stream row sort data group', 413, 3, 1),
-      ('https://synth.example.org/doc/187', 'html', 'a group scan hash big filter agg the stream window scan hash order hash the query column row column line agg value order customer key group value a window data key row hash line column window batch group small join fast window vector customer table filter key value filter the window query order batch vector agg big line agg batch big a fast customer join value filter merge join merge spark order slow a the scan part customer hash a batch table value group filter line merge hash data key batch', 497, 3, 1),
-      ('https://synth.example.org/doc/188', 'html', 'merge stream a window batch order spark line data filter filter spark group query customer slow merge hash table key data vector query batch big table a a big sort data data query a key a scan merge agg join agg window spark fast line spark group', 246, 3, 1),
-      ('https://synth.example.org/doc/189', 'html', 'group window line slow value big query stream part value column group small scan small batch order hash scan scan slow part column table hash big sort value part filter table merge a column spark table value', 207, 3, 1),
-      ('https://synth.example.org/doc/19', 'html', 'vector scan row filter vector sort query fast group a agg', 57, 3, 1),
-      ('https://synth.example.org/doc/190', 'html', 'table spark fast a hash value vector join agg row column part stream order query big value part vector window window hash row spark value sort column order key row a the big join sort row spark sort hash column spark fast a query vector filter part merge agg group table line batch big order column customer part table join customer group batch merge batch slow sort value the slow part value merge order sort spark window small', 428, 3, 1),
-      ('https://synth.example.org/doc/191', 'html', 'customer merge scan batch fast small join agg group customer line key spark hash hash order fast agg table scan column', 118, 3, 1),
-      ('https://synth.example.org/doc/192', 'html', 'filter column table part row join column the agg table part the key merge a data hash column part merge group order row a slow group', 132, 3, 1),
-      ('https://synth.example.org/doc/193', 'html', 'line join batch query key batch batch small stream key join scan part stream agg slow vector part hash fast fast order customer data group row merge the value data part', 168, 3, 1),
-      ('https://synth.example.org/doc/194', 'html', 'the scan big row query column a stream merge order small line data vector small agg part slow value merge column row line window stream spark sort join join', 156, 3, 1),
-      ('https://synth.example.org/doc/195', 'html', 'small scan small merge customer spark agg fast big merge fast filter column join a group key line big part the filter data small batch batch value value big filter the hash value slow vector scan vector part sort key order customer join group order value join column group scan spark table key big group data table row', 318, 3, 1),
-      ('https://synth.example.org/doc/196', 'html', 'filter big column slow agg batch query merge value scan column join fast table join stream stream hash slow stream fast merge join hash column value line column column table row key filter join window data slow the data scan slow value fast vector customer small order order order vector group customer big merge filter join row order data', 339, 3, 1),
-      ('https://synth.example.org/doc/197', 'html', 'a query merge column the column big line filter a customer scan filter query a slow value agg key table fast customer stream stream fast scan slow row batch slow part vector order big order sort small stream filter scan spark value line big order value the table key batch window part part merge row small small row a query small filter a vector customer vector key spark group window row filter window merge group line group order data value hash query group line agg filter big batch big line table hash row merge stream', 522, 3, 1),
-      ('https://synth.example.org/doc/198', 'html', 'slow hash join agg stream small agg line fast fast sort join column sort column part slow part part customer hash a slow small scan vector small group slow fast data column join order a column line part order spark merge filter agg batch part table merge', 254, 3, 1),
-      ('https://synth.example.org/doc/199', 'html', 'column query agg slow sort table the data customer key the merge sort the big a order big agg merge scan group spark hash table column key hash vector the', 154, 3, 1),
-      ('https://synth.example.org/doc/2', 'html', 'small fast slow filter value small value table the part data window the row a window data a scan group big vector table fast batch batch agg window customer line slow table filter scan scan slow small group fast column scan data group spark value', 246, 3, 1),
-      ('https://synth.example.org/doc/20', 'html', 'window part slow customer join the scan big window column key slow filter merge hash customer vector filter small column sort customer window a batch scan big group filter join row column part slow fast row spark line window order table hash data group part customer window agg batch window table slow agg small stream data slow customer query window line vector row key the fast customer group', 394, 3, 1),
-      ('https://synth.example.org/doc/200', 'html', 'part hash agg value big slow stream query vector a join slow stream column value customer hash spark spark filter row column data slow value fast customer agg window join small vector query order order window key big group query scan small customer order key customer row merge big a column small window', 303, 3, 1),
-      ('https://synth.example.org/doc/201', 'html', 'line merge batch value group filter fast key table vector merge group column spark stream join table sort window batch order filter data big order query group merge filter filter a scan data a stream join filter customer hash the customer join data table filter slow row big agg table line join key small hash group', 315, 3, 1),
-      ('https://synth.example.org/doc/202', 'html', 'join key window hash query key data table fast key slow key small hash big line value batch table big small the line part merge window the table scan fast fast data data group hash order hash order query group order part scan window a window slow column agg window a part query agg merge sort value scan sort fast hash query spark part value key join agg vector key slow stream batch row agg window batch spark key order query a sort slow window slow spark window stream join order', 481, 3, 1),
-      ('https://synth.example.org/doc/203', 'html', 'column table line batch slow query value scan sort part table line part slow hash a vector window slow data hash batch query row', 128, 3, 1),
-      ('https://synth.example.org/doc/204', 'html', 'vector group group join table join agg part sort batch window slow order small line window sort fast merge fast small', 117, 3, 1),
-      ('https://synth.example.org/doc/205', 'html', 'join hash agg batch the big window data vector key window filter batch scan column a slow scan table group small window slow sort sort scan big slow batch key batch the query column big stream hash fast stream fast stream customer order data stream slow small row batch agg scan group order batch key join scan sort part hash vector row window a merge sort fast query customer', 376, 3, 1),
-      ('https://synth.example.org/doc/206', 'html', 'key the slow small join merge query big table row hash column group hash table hash filter the big row table slow filter big merge', 130, 3, 1),
-      ('https://synth.example.org/doc/207', 'html', 'merge big join batch scan vector part table hash small stream key agg order big slow key sort filter a part join line key small part vector small small hash order group merge data order value group agg scan a value order spark batch window scan batch agg column join a order join row stream big data join filter key scan vector join hash line scan part hash fast stream table line line', 385, 3, 1),
-      ('https://synth.example.org/doc/208', 'html', 'hash order the line key data key line stream agg hash batch spark data sort data hash scan order value order window', 115, 3, 1),
-      ('https://synth.example.org/doc/209', 'html', 'big spark fast sort group big fast hash hash value filter agg hash merge merge vector hash the merge batch hash row row part merge big slow a a table slow stream big fast column hash slow query key slow key spark group sort', 223, 3, 1),
-      ('https://synth.example.org/doc/21', 'html', 'key order join customer batch row data customer vector key customer data hash hash window slow hash scan key big column merge sort spark column window small filter batch customer scan slow window hash order a customer', 217, 3, 1),
-      ('https://synth.example.org/doc/210', 'html', 'customer batch window column data order small vector fast value part the key order data query part row big query slow key row stream big batch row customer the customer row query row window column table customer the a window filter query scan fast small big value window filter customer fast batch merge merge join key agg fast table a big agg window column row small slow a part row sort line big big the column scan fast stream vector key column data data small query part column hash spark key window table small', 515, 3, 1),
-      ('https://synth.example.org/doc/211', 'html', 'column key line sort spark big query window value table filter filter a join join join hash part slow window window small filter fast sort a window column column agg customer part scan part table query row value table the join scan scan value table row batch stream row group row', 279, 3, 1),
-      ('https://synth.example.org/doc/212', 'html', 'vector small hash group customer small vector sort small customer data scan key hash window customer small column join group vector line data row fast row the spark value small small window stream big filter vector big a order value customer stream order', 254, 3, 1),
-      ('https://synth.example.org/doc/213', 'html', 'fast part scan line column agg table table fast query group data small the window agg stream query agg row window vector spark group a table spark data spark group small hash slow small merge line hash part a join agg hash query small fast join the the scan the join agg sort vector sort the group small a column big row order the fast hash window slow fast small vector slow merge data line merge stream big filter batch query window big customer merge hash row line', 467, 3, 1),
-      ('https://synth.example.org/doc/214', 'html', 'data query part the customer scan query window agg row hash hash part', 69, 3, 1),
-      ('https://synth.example.org/doc/215', 'html', 'slow the batch batch a customer query filter batch fast row hash key part fast batch row batch value window window a batch customer vector column row order the the key hash merge line batch batch stream slow query fast vector sort big column data group vector line slow fast column row table a window the a sort a value customer hash part the scan query row column the window window sort slow sort hash scan column agg key a batch merge stream slow query fast batch stream window line table the value filter row small the merge', 527, 3, 1),
-      ('https://synth.example.org/doc/216', 'html', 'column group spark sort value customer a small stream data fast slow window join scan customer join key order stream fast stream spark join column join slow agg group table column vector group batch join column slow small query line big scan the value group big join row order join customer small a hash join spark line key vector customer vector order group scan the slow customer column column join query filter part join big fast part vector line hash table data data merge group customer scan query customer filter fast group', 529, 3, 1),
-      ('https://synth.example.org/doc/217', 'html', 'table part key sort column key line hash small sort vector the hash a slow query data value small scan fast key order fast query value part merge a order big small group filter merge order fast join group agg filter agg part filter hash data key stream order big slow stream scan column scan scan window key small spark order a a sort customer window', 350, 3, 1),
-      ('https://synth.example.org/doc/218', 'html', 'data line table small value stream stream part agg filter a join line line group window key a value scan spark merge group customer customer spark query agg column query join row agg spark query big slow sort the stream part filter window fast a column group value slow customer part query table scan fast key table column sort small value line the group slow query join order small table group filter query query group data column vector table vector big', 455, 3, 1),
-      ('https://synth.example.org/doc/219', 'html', 'scan order customer big vector scan customer table column order customer group order sort table value line big sort part customer small fast merge table stream scan agg stream', 175, 3, 1),
-      ('https://synth.example.org/doc/22', 'html', 'slow sort small join column a group order line window row big line vector key batch vector table value scan big spark stream table stream stream join query table query table agg big query line value fast vector small filter customer small fast merge table vector group vector group group hash spark key query sort group part spark join query query vector line agg agg the value row table hash the query query group stream line spark spark the small order', 454, 3, 1),
-      ('https://synth.example.org/doc/220', 'html', 'part sort group column data agg vector order sort a batch order sort stream hash hash filter row table data part query key query column value table row value the vector spark small data sort group the order vector join slow part column row filter window batch customer batch slow data merge column slow fast slow agg filter data vector the customer window value filter hash line value agg key the scan value column customer part part fast order value part line group group column row join data join the order filter key value table stream slow key table', 553, 3, 1),
-      ('https://synth.example.org/doc/221', 'html', 'join order value key vector stream customer fast customer window sort merge part sort agg the agg the fast scan group big table slow spark key merge the scan hash filter scan scan vector line a slow big the row batch data', 221, 3, 1),
-      ('https://synth.example.org/doc/222', 'html', 'vector spark window scan line part table customer vector value data part spark agg scan agg the agg batch a hash group group batch agg a query column small hash window table part small the key big hash part value part batch a query data line the the fast scan a', 261, 3, 1),
-      ('https://synth.example.org/doc/223', 'html', 'table vector group the agg table part part customer small stream key agg batch small order table the big vector hash order sort fast agg sort join table data order big data value key spark table hash agg query sort big value stream key value line customer query group group row the window key agg part window spark fast small the slow join row hash slow big scan a customer agg table vector filter window group row small hash agg part stream data vector value', 459, 3, 1),
-      ('https://synth.example.org/doc/224', 'html', 'scan part batch customer group join window data scan big column big join batch column big big fast key the column window customer query query customer table filter fast filter hash order customer merge query agg the agg small customer scan customer order column line key sort stream stream slow a group stream line line part filter group column batch agg big join the row table merge the spark filter value customer row value value row stream', 442, 3, 1),
-      ('https://synth.example.org/doc/225', 'html', 'small join agg big value scan small key column slow filter query big filter big join fast group order part customer stream filter small query row batch a join join value value sort column table filter fast sort a merge window the part filter table column group data merge data the row a slow spark join vector table small small value group row column join scan value part customer column part batch row value batch data', 419, 3, 1),
-      ('https://synth.example.org/doc/226', 'html', 'part vector small the spark order order table small scan join key filter value a small part group query table', 109, 3, 1),
-      ('https://synth.example.org/doc/227', 'html', 'join part table filter agg small hash value customer row group order part window data customer window part part column spark scan window spark a hash stream small table filter the window customer join query small stream fast filter slow row window customer row batch sort group agg hash the customer query spark hash a row big customer small part slow key order data order column scan value query column data small sort the sort column key vector value customer filter', 468, 3, 1),
-      ('https://synth.example.org/doc/228', 'html', 'hash fast window vector row fast big sort a slow query line the small slow fast slow agg scan data window window agg column value a column stream vector vector hash stream window scan scan sort part slow scan query part filter value key key hash merge join hash stream key merge small column join merge agg batch key a fast hash group part small big table stream small small a customer query slow small value slow column data join data customer join window a merge', 464, 3, 1),
-      ('https://synth.example.org/doc/229', 'html', 'the order join group join order the part vector spark slow scan customer agg table spark customer value filter batch key filter data data small part big table customer data group join slow sort customer column big value part value agg scan spark batch key the fast value join vector key line vector key small join a small spark the value query vector spark order group the value query group hash hash sort row', 409, 3, 1),
-      ('https://synth.example.org/doc/23', 'html', 'filter slow the data customer sort agg query stream vector agg hash spark group sort line stream scan batch hash big slow merge part data the filter window scan batch', 166, 3, 1),
-      ('https://synth.example.org/doc/230', 'html', 'the query value vector spark group order key scan order customer agg big the merge query row merge filter merge a key join spark hash small filter group vector customer row data scan sort filter sort stream value customer batch hash a line the customer batch scan key column part slow vector small filter column', 311, 3, 1),
-      ('https://synth.example.org/doc/231', 'html', 'a part window slow spark table fast filter data order small merge window slow table order vector vector merge group batch hash customer filter big column a', 155, 3, 1),
-      ('https://synth.example.org/doc/232', 'html', 'key column a hash join big sort spark vector merge query order column data a sort hash key key column line small key key big customer hash batch window customer customer customer stream order stream row agg merge group window value spark merge batch big big row scan the hash join big small batch fast key scan batch', 316, 3, 1),
-      ('https://synth.example.org/doc/233', 'html', 'join data data query join sort merge row hash customer order column small stream hash batch value filter part data small part small a small filter data batch a line row group sort agg a small spark sort sort slow join hash vector window vector filter fast column table agg merge query agg merge filter vector slow small window join agg scan table stream small data line slow customer value small fast key agg line value stream part vector batch the big value', 458, 3, 1),
-      ('https://synth.example.org/doc/234', 'html', 'a key batch query merge merge big big small window fast merge a query big fast small fast agg fast sort hash the query column table value row small fast line row stream query group table table sort order table a data the stream the order column slow data the hash agg row spark value vector big filter agg sort window scan batch value spark agg', 344, 3, 1),
-      ('https://synth.example.org/doc/235', 'html', 'key fast customer batch window row group query agg the key spark hash part big stream stream column the stream order sort window sort data data customer stream filter fast data value spark join spark filter small spark spark', 224, 3, 1),
-      ('https://synth.example.org/doc/236', 'html', 'table column agg join group data line sort table hash line dup', 62, 3, 1),
-      ('https://synth.example.org/doc/237', 'html', 'part the table batch line the table line group table join data line join line hash agg line part big row window stream value merge slow window hash slow column part slow agg join slow table join value merge scan row a part agg batch row hash value hash agg line customer hash merge row the table scan row fast merge small join column value batch data agg order fast stream query vector query a value join spark group', 416, 3, 1),
-      ('https://synth.example.org/doc/238', 'html', 'query query part slow order key value fast window merge spark key filter big vector small vector hash filter line line spark row a the value customer row a slow data key data table spark key value key scan order spark slow spark window merge big join filter', 257, 3, 1),
-      ('https://synth.example.org/doc/239', 'html', 'fast part batch filter row vector window window line row hash group the part hash merge customer fast value row vector line group scan data a hash small window sort', 164, 3, 1),
-      ('https://synth.example.org/doc/24', 'html', 'sort a spark table stream sort data merge line slow table value query filter sort a filter small slow table fast batch merge customer small data merge row spark vector key hash merge group column merge vector order spark order group part slow batch line value query part fast big part row line customer customer vector part join stream big sort hash fast hash join part sort part the key line batch data big sort row line hash table group stream merge scan column data big row customer customer part join key big column vector a vector', 535, 3, 1),
-      ('https://synth.example.org/doc/240', 'html', 'the fast fast fast stream slow sort group order window small value row scan part order order the value small small row fast key the hash small join customer slow small order column spark filter the window small window scan big vector big fast batch vector agg line spark agg part agg data data group small table a value filter key query sort window group vector the data key table', 380, 3, 1),
-      ('https://synth.example.org/doc/241', 'html', 'a key column value spark spark line batch data column data query big value sort data row part row vector scan small key fast part filter query batch window big window table value query vector fast order spark the fast slow batch value join data stream sort small vector batch join vector line customer a fast batch merge spark hash column query the stream sort value spark line data batch query column join small slow agg query column filter a table part spark the filter value spark batch vector slow order the', 511, 3, 1),
-      ('https://synth.example.org/doc/242', 'html', 'join sort vector filter merge value order row window batch column order line hash vector small data batch stream slow row query big key customer batch agg big fast table customer the the vector merge spark query sort big fast customer value table key value line slow sort data sort fast row merge part column big small order data window sort agg line batch customer big scan customer line', 388, 3, 1),
-      ('https://synth.example.org/doc/243', 'html', 'hash merge batch a window filter sort customer a part scan customer fast the stream hash fast scan scan value hash query batch sort hash query small query sort fast row line part', 178, 3, 1),
-      ('https://synth.example.org/doc/244', 'html', 'query order part vector value customer column agg agg batch spark hash value the line agg order value small query merge scan order key big line customer agg line customer key line group group group data scan vector group stream sort data small small sort agg column join key vector order the sort slow data merge order order scan spark part row slow join batch query scan', 371, 3, 1),
-      ('https://synth.example.org/doc/245', 'html', 'the spark join stream a small order merge column group customer part a spark value customer the column the window big merge spark scan table vector order big order group join row order filter small column part group big value scan filter filter the scan value order column part sort filter merge column join customer scan table hash value window batch the small join small group order small vector row a big scan agg order fast row window slow group group spark part', 466, 3, 1),
-      ('https://synth.example.org/doc/246', 'html', 'agg column part slow scan the merge key sort hash the part column vector fast batch sort a batch agg the batch part sort part the spark big line scan customer batch filter the', 175, 3, 1),
-      ('https://synth.example.org/doc/247', 'html', 'slow order stream a the fast order table batch big sort filter stream order customer a row order order customer big sort data fast vector part data slow a table hash scan window agg sort agg join merge stream hash value group the slow scan part table sort group agg data stream part order sort agg part agg small window query key filter a order value spark row query merge query stream query stream hash join scan slow table batch', 430, 3, 1),
-      ('https://synth.example.org/doc/248', 'html', 'customer batch query agg slow window group filter hash agg data join row slow the filter column row line line sort table query big join batch sort key the row spark merge table stream hash sort batch batch hash spark vector scan the agg join spark line fast filter query table scan column scan window order stream sort hash small stream vector stream customer query slow batch customer key column big data sort small scan filter filter hash spark', 446, 3, 1),
-      ('https://synth.example.org/doc/249', 'html', 'order table key key filter row the a a row customer slow slow agg line vector small batch value vector join part order data hash spark stream table order join data a batch big column table customer vector line merge fast the row window the query row fast scan query agg value table vector big sort agg window the column the hash a scan a sort join spark vector vector table hash filter scan slow hash filter batch a join filter key', 431, 3, 1),
-      ('https://synth.example.org/doc/25', 'html', 'merge fast query fast column fast agg small query customer order vector line small vector part sort batch line stream slow customer data row small fast agg join slow row group stream small agg value the the row fast row hash sort filter hash hash sort merge line a slow window fast query table stream merge small key the agg a merge fast query a query slow order window scan part filter window small scan part window the big part scan scan big window query value scan the batch window small fast key group', 505, 3, 1),
-      ('https://synth.example.org/doc/250', 'html', 'value spark order filter vector batch line agg the group spark data data hash batch agg order scan join data slow batch stream fast column scan value customer big agg slow hash customer hash the the stream data scan agg group spark window customer', 247, 3, 1),
-      ('https://synth.example.org/doc/251', 'html', 'part window fast group merge spark line data table customer window the fast scan query merge slow merge agg slow batch value batch hash order vector join the batch window a a order spark big agg join customer the filter group order batch batch hash slow agg customer window column table table column filter row fast part spark query group table merge small data row row line spark merge sort scan line line small spark key big group value part small join big filter stream agg vector fast fast query group vector slow spark', 523, 3, 1),
-      ('https://synth.example.org/doc/252', 'html', 'spark window filter value key vector hash scan customer sort value join line line batch small window column data data data data agg query merge agg table scan window big order join sort the the line scan agg sort customer merge a merge merge merge line', 252, 3, 1),
-      ('https://synth.example.org/doc/253', 'html', 'key query merge sort slow scan agg sort window vector window merge order row value the row small vector small spark part the merge join line batch part row the table line big table spark agg a data', 197, 3, 1),
-      ('https://synth.example.org/doc/254', 'html', 'key sort table sort vector part hash sort data group batch row vector data sort agg order column column', 103, 3, 1),
-      ('https://synth.example.org/doc/255', 'html', 'row spark slow merge customer big spark customer slow column batch stream merge value sort the big big stream stream row line slow customer hash a merge data', 157, 3, 1),
-      ('https://synth.example.org/doc/256', 'html', 'group merge query scan sort small data hash query query filter', 62, 3, 1),
-      ('https://synth.example.org/doc/257', 'html', 'the value sort vector agg scan merge batch filter hash line small slow group slow data stream slow data small fast', 114, 3, 1),
-      ('https://synth.example.org/doc/258', 'html', 'small small the merge batch join row small vector big group small customer part big agg big join small batch a data column key part part big key slow table spark hash window key data window table order slow fast line merge hash spark join data join batch sort hash join a the scan agg table value data filter customer agg small big value agg spark customer sort spark stream customer merge fast a', 396, 3, 1),
-      ('https://synth.example.org/doc/259', 'html', 'line data slow data a vector scan customer hash window filter part stream table hash stream spark window part scan line stream small window vector data batch data join slow stream vector small vector order line part big agg agg vector column spark scan column', 259, 3, 1),
-      ('https://synth.example.org/doc/26', 'html', 'table small sort order small hash stream data big key group dup', 63, 3, 1),
-      ('https://synth.example.org/doc/260', 'html', 'order part slow big hash table data data table the sort data order scan group table merge big order agg order key small the spark line', 134, 3, 1),
-      ('https://synth.example.org/doc/261', 'html', 'a data small hash big row fast window slow window value group order data value query customer column spark merge join big vector customer stream group agg query join a the big agg merge data order filter small data fast column window scan column batch column query stream small stream small table scan order fast slow table merge spark sort table join line window order scan value value join window data hash order order table table a line big row vector part batch stream', 472, 3, 1),
-      ('https://synth.example.org/doc/262', 'html', 'a column data hash window spark part join batch window key order the query query big part table part small scan query table filter small query line filter column value filter join slow spark window hash scan stream the data table the the slow filter a fast', 256, 3, 1),
-      ('https://synth.example.org/doc/263', 'html', 'data a big value table batch fast agg join data spark batch data value table spark agg query small join fast query merge line customer line filter query part a query value the customer stream stream key group window big big spark group merge scan hash line group window customer fast part group the row row group join column order row join filter big fast scan line slow a hash agg filter key fast merge order big line filter stream a group vector', 447, 3, 1),
-      ('https://synth.example.org/doc/264', 'html', 'table order scan scan part merge column column group table merge stream window order batch merge part big group vector customer part column key spark merge a spark batch line value slow hash query row row slow agg line sort stream spark group agg batch spark row row a query batch hash hash table agg part group key customer big vector join the value vector scan customer scan row join key batch order line key filter value window fast part small stream table stream row merge join sort small window agg a data agg batch line slow customer join', 544, 3, 1),
-      ('https://synth.example.org/doc/265', 'html', 'table hash join big stream part column hash part merge sort slow a line table part small part part filter small vector vector data part line row fast customer window key the small join merge window value column merge customer part merge column group small value column', 268, 3, 1),
-      ('https://synth.example.org/doc/266', 'html', 'line key filter join group the key customer merge customer sort agg slow join line fast small sort join data hash slow batch batch data table scan spark data value fast order window scan agg scan a row customer small customer', 225, 3, 1),
-      ('https://synth.example.org/doc/267', 'html', 'merge group part scan row value column batch the table line customer small sort slow value slow hash data row slow slow key group window row a data slow small scan key row value query filter merge stream the spark spark join a slow hash batch filter value small value spark vector big the spark small sort value window key filter vector batch scan filter spark spark query big part merge table join row slow hash batch small', 424, 3, 1),
-      ('https://synth.example.org/doc/268', 'html', 'data join stream a row the join the table the filter window query vector stream batch stream group data part vector agg query column data hash stream data part filter join small small table agg hash merge order batch', 216, 3, 1),
-      ('https://synth.example.org/doc/269', 'html', 'data scan slow slow hash spark order window merge line scan join table data hash order hash slow key spark key row stream table big slow customer hash query the stream scan fast agg the slow window stream value line vector small order column slow small a the filter table hash vector query vector fast query the slow merge table line filter small window window window key filter row the agg merge big spark data a the window line key group stream spark scan hash part', 467, 3, 1),
-      ('https://synth.example.org/doc/27', 'html', 'key small customer spark merge slow scan scan column batch merge group line key stream data sort slow table group join merge value slow query sort a slow agg key stream agg table value fast value column key row column group key line filter small group row vector table stream part big scan customer big line column order agg value a hash column a', 346, 3, 1),
-      ('https://synth.example.org/doc/270', 'html', 'column filter row merge a window key scan row fast big the stream a query spark filter vector a slow agg data sort vector spark customer group scan stream line table merge a batch part table value data a agg part merge customer order slow customer data group value a part big group big vector order join order table the row agg sort stream data a scan vector fast batch slow key big key window window group spark stream part table agg row line customer merge customer query fast big hash stream data', 499, 3, 1),
-      ('https://synth.example.org/doc/271', 'html', 'window spark sort scan agg spark merge column fast stream join line stream join sort value join line line customer join sort merge scan query order big filter value stream hash group part join scan group small vector small value group filter hash small slow row a vector slow batch group row big', 295, 3, 1),
-      ('https://synth.example.org/doc/272', 'html', 'slow fast join part filter data group order column group value filter big line hash slow query fast spark key order part a the row column column small customer sort small slow scan part row scan merge small join hash the key batch data join window key slow a the row key group vector a scan data big query query join value table join the value big table spark line join slow join sort row group small value agg value merge filter column fast fast hash stream sort line column small join', 486, 3, 1),
-      ('https://synth.example.org/doc/273', 'html', 'agg table window scan table part column query vector small key key group slow spark stream group vector key vector merge order part sort value key scan query', 157, 3, 1),
-      ('https://synth.example.org/doc/274', 'html', 'window sort the sort big slow part data key table small group batch stream query vector window customer stream value merge hash stream agg fast agg big table filter the sort filter the merge column line a column vector join agg scan line value the batch order vector a filter column agg window customer spark join the order row filter vector stream spark merge big part stream slow big window agg small small group value merge column hash vector join join merge table group join row customer agg stream batch row batch part row sort sort', 537, 3, 1),
-      ('https://synth.example.org/doc/275', 'html', 'a row a window merge hash window group order join', 49, 3, 1),
-      ('https://synth.example.org/doc/276', 'html', 'window hash small customer customer vector vector scan table order the key merge merge join agg fast order spark query query scan join batch slow window part vector group value customer data fast vector big filter key fast key vector row stream sort key spark data table filter row a scan batch value key agg hash value scan customer batch small table order stream vector spark group fast join spark join part hash query query row slow window window merge row agg big agg line small row spark filter part order small scan data table table', 538, 3, 1),
-      ('https://synth.example.org/doc/277', 'html', 'query spark query spark spark key big column a join line order value merge value small small the key key query spark fast merge hash value data fast key a row join', 163, 3, 1),
-      ('https://synth.example.org/doc/278', 'html', 'row table column spark hash merge table row row table the batch scan hash sort key join data big filter merge small join row slow join key scan small batch big column sort fast vector customer spark batch hash part merge column sort big join table group window scan big join fast value value row slow merge a filter order batch big key fast column order column column column filter small column', 394, 3, 1),
-      ('https://synth.example.org/doc/279', 'html', 'value a slow small batch fast part hash agg slow batch column query hash window merge window slow filter part row window scan scan merge small query line merge customer spark the row vector slow the a vector fast scan big sort slow value hash vector scan column column filter table', 281, 3, 1),
-      ('https://synth.example.org/doc/28', 'html', 'query hash key line spark agg fast slow row key filter window customer big value table query query stream fast sort sort query filter slow column query merge a stream big group merge window a filter group batch scan stream scan line a join stream value column vector filter fast big part column sort stream fast slow hash batch stream', 334, 3, 1),
-      ('https://synth.example.org/doc/280', 'html', 'scan window value fast agg table stream data batch merge data hash group big agg line group the column join stream big merge key slow the key part column column part filter scan customer query batch data a key line big stream fast hash key join stream vector window filter sort vector sort agg row sort big join filter value the slow the value query the merge customer a join filter data part small a vector slow slow key column big fast hash order join fast merge spark', 470, 3, 1),
-      ('https://synth.example.org/doc/281', 'html', 'row key slow merge customer group key order window part filter merge small order window data order small line line value spark agg line column filter sort filter merge row', 171, 3, 1),
-      ('https://synth.example.org/doc/282', 'html', 'a column scan small stream a column data join sort vector hash customer query join sort value key group group stream part join agg batch stream data spark batch sort batch filter', 178, 3, 1),
-      ('https://synth.example.org/doc/283', 'html', 'customer hash customer agg small window small key query join vector batch the hash part window table spark join row sort query customer scan group big small slow merge hash part order customer big small agg window sort part scan batch group a the key agg key part slow window window merge hash order query vector the part filter join key row spark filter value column row vector line order slow small customer vector line fast join window big vector slow batch part group', 471, 3, 1),
-      ('https://synth.example.org/doc/284', 'html', 'batch agg data line value slow hash sort window sort fast customer value value agg value big agg part stream a table spark small column agg data vector a line data line order vector spark sort filter sort group filter stream table customer spark scan fast key the data spark row', 278, 3, 1),
-      ('https://synth.example.org/doc/285', 'html', 'group fast fast data row data stream part stream hash stream order a scan batch order big a spark join group scan stream data spark vector query column window spark a table hash slow small sort a small big sort sort merge merge a value order merge batch fast row customer fast line agg data vector value key table line slow key column slow data window merge agg vector spark window vector merge group batch spark batch small spark table key customer column filter hash line hash scan value data slow big hash dup', 512, 3, 1),
-      ('https://synth.example.org/doc/286', 'html', 'value a join query row query table filter spark value value filter query group customer group a merge small group customer batch key line data order small customer key part key line filter hash part table scan the vector table slow slow batch agg stream hash', 258, 3, 1),
-      ('https://synth.example.org/doc/287', 'html', 'customer merge sort group join the slow spark group agg column stream sort a stream spark vector hash', 101, 3, 1),
-      ('https://synth.example.org/doc/288', 'html', 'a key part scan scan customer sort filter group group big fast part vector join table big slow agg agg key window table customer column window a query slow customer small small', 176, 3, 1),
-      ('https://synth.example.org/doc/289', 'html', 'a group stream merge merge window window customer group filter spark data group vector vector query slow query slow column vector hash key window agg window filter big vector big window table fast slow table hash window fast', 224, 3, 1),
-      ('https://synth.example.org/doc/29', 'html', 'table small window vector a the scan vector group fast value key fast stream stream stream row hash hash slow merge filter vector group customer line a slow query scan data batch customer customer', 196, 3, 1),
-      ('https://synth.example.org/doc/290', 'html', 'spark scan spark table hash batch vector key customer merge hash order table part hash stream sort join order order data stream order batch fast group table filter small row value table part stream table hash the table window a a a table agg line filter scan the batch batch column merge stream line group table a column vector spark filter line hash table agg join group query key column big filter query column window customer slow sort part merge order scan filter spark big window table small group scan vector spark batch dup', 530, 3, 1),
-      ('https://synth.example.org/doc/291', 'html', 'join key scan spark query part small row hash vector small part data window part vector filter join customer vector row a sort stream key window scan group part column stream scan column big line line filter join part customer window fast column join part slow small value line a agg group query fast a order stream row a scan vector join the small line vector order scan table join merge stream order window a column', 417, 3, 1),
-      ('https://synth.example.org/doc/292', 'html', 'batch merge query fast vector slow line query spark a table data agg small line query fast column data hash vector vector big fast slow line customer data spark join scan join a vector data hash part data table line scan big data customer data window a fast window join column filter key a value vector part slow scan join part hash row sort join sort join hash data scan part hash join merge order merge order customer line part batch join the row batch agg', 458, 3, 1),
-      ('https://synth.example.org/doc/293', 'html', 'column stream spark hash group join key table join window filter fast order data data big scan big table window order group query row vector slow small filter scan a filter data key agg window table the agg stream join agg fast big column a query key the data spark window spark spark order hash vector a sort line column spark order filter data filter order fast group group big group', 385, 3, 1),
-      ('https://synth.example.org/doc/294', 'html', 'row hash agg value column merge stream sort window sort group data query the part fast group customer value query value table fast customer data query table value vector row customer sort slow merge a big filter order order customer sort row slow join merge group row customer big spark batch merge line sort table order value key fast scan customer customer merge batch scan small spark key column vector table sort data window agg a scan big the the batch group column', 470, 3, 1),
-      ('https://synth.example.org/doc/295', 'html', 'order filter query key vector query scan slow big join customer filter group order sort stream batch filter part stream slow vector order column part data join value slow table small dup', 186, 3, 1),
-      ('https://synth.example.org/doc/296', 'html', 'batch fast join vector big vector filter spark spark stream a merge spark big a stream value row table batch join sort the key fast customer join value the row slow row column filter merge customer hash spark vector line batch join sort big slow data big small window join customer stream line key the data part merge vector line hash agg key line join vector', 359, 3, 1),
-      ('https://synth.example.org/doc/297', 'html', 'part key table row data order key merge column customer stream group group stream spark batch row agg order sort window slow fast group row scan a group stream fast table part the sort spark a vector row fast line part line column agg value slow join value a fast data scan agg agg line spark stream line part the the line', 322, 3, 1),
-      ('https://synth.example.org/doc/298', 'html', 'order filter vector batch vector data hash small sort big part window batch customer merge small table agg hash customer table scan stream window column key small value fast column key part', 189, 3, 1),
-      ('https://synth.example.org/doc/299', 'html', 'query table spark data join key big vector small merge line batch value line key the query join key row slow sort sort data table window table spark join batch table data query big slow part value table merge the filter row part stream line group slow order sort window hash line data fast scan sort slow key order the part sort agg value slow query vector customer group slow group the group spark big query big line order hash fast row key row column join vector a row customer hash order join vector', 502, 3, 1),
-      ('https://synth.example.org/doc/3', 'html', 'window merge spark merge batch table a big a join batch table window big the join line agg small slow small stream customer group spark data vector', 147, 3, 1),
-      ('https://synth.example.org/doc/30', 'html', 'key row sort small key a batch table batch spark hash row data fast window query value row customer value table stream order small fast vector the the window sort join', 167, 3, 1),
-      ('https://synth.example.org/doc/300', 'html', 'vector vector stream stream fast the batch a line group hash merge order agg order join customer spark line data row hash column line order order customer key join key row key stream fast customer agg big query small', 216, 3, 1),
-      ('https://synth.example.org/doc/301', 'html', 'group fast fast data row data stream part stream hash stream order a scan batch order big a spark join group scan stream data spark vector query column window spark a table hash slow small sort a small big sort sort merge merge a value order merge batch fast row customer fast line agg data vector value key table line slow key column slow data window merge agg vector spark window vector merge group batch spark batch small spark table key customer column filter hash line hash scan value data slow big hash', 508, 3, 1),
-      ('https://synth.example.org/doc/302', 'html', 'table a join fast spark column spark batch big group a part the key stream line filter join batch column filter query scan join join value value the group slow filter value filter sort order sort order key spark part scan join small slow batch group data vector key key merge filter slow a fast agg customer vector vector join agg key part data query window order line fast merge spark filter data fast part query data data filter customer vector sort group group batch agg value scan', 484, 3, 1),
-      ('https://synth.example.org/doc/303', 'html', 'customer small filter hash key key order merge line scan a a query order join column window merge table window value a line key agg slow filter join group join window data customer hash key hash data the sort big merge query customer sort window group spark merge fast slow big key scan table hash merge filter part sort slow data join agg customer big big data row small batch sort small column query big stream value a value column customer filter fast', 454, 3, 1),
-      ('https://synth.example.org/doc/304', 'html', 'row column value batch query query key big sort fast merge sort join batch window the part the the hash agg window a agg group small fast customer key key key hash vector a column the batch filter merge batch part table', 219, 3, 1),
-      ('https://synth.example.org/doc/305', 'html', 'filter stream agg small filter batch scan row stream small join', 63, 3, 1),
-      ('https://synth.example.org/doc/306', 'html', 'order value stream table value vector table a big order stream join scan vector window query value batch spark group batch stream join join small customer query small line the small join stream big big sort row batch row small merge table filter query line query hash the group big data the customer join key filter scan batch hash agg value big filter hash join customer order stream agg slow the stream value line small', 421, 3, 1),
-      ('https://synth.example.org/doc/307', 'html', 'the big filter group small join vector key group value row value slow customer slow table vector join window customer value small sort join row query line key key order the customer scan stream sort table group row group row the column big join data filter fast scan customer query big spark part batch', 302, 3, 1),
-      ('https://synth.example.org/doc/308', 'html', 'batch scan window value filter join stream big column hash group part window row slow scan vector', 97, 3, 1),
-      ('https://synth.example.org/doc/309', 'html', 'row small column agg value group filter small merge window window join the big order value hash batch merge big batch query line join window value customer table join agg group sort a order row merge hash the fast agg scan fast group fast', 238, 3, 1),
-      ('https://synth.example.org/doc/31', 'html', 'the a column batch customer value vector line group data batch window filter fast small fast customer group data column line agg column key query spark hash stream vector a data customer filter join stream customer small row part big line filter hash', 250, 3, 1),
-      ('https://synth.example.org/doc/310', 'html', 'merge join table a slow part table column merge group group column query sort filter spark big a merge customer part row query query fast filter big', 148, 3, 1),
-      ('https://synth.example.org/doc/311', 'html', 'merge join vector the order agg hash window group group small customer group sort spark scan table line fast table big spark key small fast query order the agg table batch value the table group the batch scan the query a customer customer join agg the join vector order join filter small part batch column the part group window a part group data scan merge group key sort a sort value batch stream part merge fast line hash line slow spark stream customer filter value hash spark query row merge', 495, 3, 1),
-      ('https://synth.example.org/doc/312', 'html', 'sort filter table agg big spark scan key line scan key merge key order row data a scan stream sort column data spark window part column column line filter hash data join merge query spark key the filter column window batch the a query hash spark merge data spark group window order vector stream scan query merge join query data window stream group small slow the group', 369, 3, 1),
-      ('https://synth.example.org/doc/313', 'html', 'filter scan part a data sort a value value part a batch row merge batch spark the value', 87, 3, 1),
-      ('https://synth.example.org/doc/314', 'html', 'customer merge agg stream window data part key a spark scan vector join hash small query group order big the key the a key batch row row query row spark agg agg order line column slow window', 190, 3, 1),
-      ('https://synth.example.org/doc/315', 'html', 'group small data line agg spark row merge table fast window slow small column window table merge scan line a value order small scan query group sort small vector group merge sort row sort batch table key query part line line column batch part stream row merge value sort merge order a line the hash stream spark query vector row batch row stream join group order line row line a sort big stream big big the scan part line a merge key order join order hash scan', 460, 3, 1),
-      ('https://synth.example.org/doc/316', 'html', 'scan data a vector key small fast a spark data data key data slow batch small fast spark row hash table batch column data big slow part column spark fast query stream small spark join window query data line value column value row merge data hash group small customer agg batch the filter stream agg row fast batch agg merge vector query spark batch merge merge customer scan value slow scan batch small join', 407, 3, 1),
-      ('https://synth.example.org/doc/317', 'html', 'merge value data batch filter hash hash customer sort window order column part join order query hash window scan hash customer spark customer line fast spark part scan sort sort join query scan part scan window vector order sort sort batch hash scan order fast line filter window part fast part window sort order stream scan window customer big the filter hash table row stream line sort agg a key spark data', 408, 3, 1),
-      ('https://synth.example.org/doc/318', 'html', 'stream customer row hash column scan stream row vector line window line key batch line query order merge hash column order hash key big window slow big query filter small filter slow query data value spark query part line a fast key slow hash window hash part value vector stream customer big big filter slow fast hash slow order column window stream merge agg merge fast customer sort big row data scan stream query order big part filter agg join a a fast', 456, 3, 1),
-      ('https://synth.example.org/doc/319', 'html', 'agg stream fast stream order merge merge a order merge value value query column table join hash group vector vector scan table batch spark table spark group stream join small merge scan merge stream slow customer key key spark query query agg window the part customer slow big customer value value slow filter the row small query customer customer data join small window sort window line small window window vector key vector customer filter row data fast big customer line column spark merge sort merge merge key', 513, 3, 1),
-      ('https://synth.example.org/doc/32', 'html', 'table join row merge window window vector customer join window big spark scan merge order big stream row group group the batch small stream the the order slow agg stream scan scan vector filter data part hash hash fast data scan group fast table hash agg part sort window scan line big group hash stream a data data row key part small a customer a the table value order vector row merge value agg column sort stream data line batch agg scan small small filter sort row customer vector stream column spark customer', 513, 3, 1),
-      ('https://synth.example.org/doc/320', 'html', 'the big column merge fast a line row agg batch query big filter filter batch agg stream hash the key stream a the spark column customer scan window column filter slow order join row the key scan sort fast batch customer agg a window small merge row sort order order part row line line spark vector column join scan slow value join batch line filter data slow column fast data query value vector value line', 405, 3, 1),
-      ('https://synth.example.org/doc/321', 'html', 'stream vector sort column data stream the spark table stream data fast group part stream scan query merge small order agg spark order big line filter order line spark spark order vector customer row stream stream merge slow value sort vector fast small merge value value big window merge data', 292, 3, 1),
-      ('https://synth.example.org/doc/322', 'html', 'table window big column fast column key small batch window row a hash order window key data sort spark fast small table big data customer big merge big scan hash customer scan customer group hash the value stream column fast big order column filter vector', 255, 3, 1),
-      ('https://synth.example.org/doc/323', 'html', 'query column group agg filter value query join scan batch a stream filter agg hash order key table hash agg a the a merge sort line order big fast group hash merge order window hash vector the batch slow line scan table table table merge scan fast table scan value the table window line join fast customer join vector fast sort dup', 331, 3, 1),
-      ('https://synth.example.org/doc/324', 'html', 'group line slow window slow spark order the merge table spark table batch row order scan stream the value small row small spark value fast scan row window slow key big a vector slow join key hash value line fast group slow value', 228, 3, 1),
-      ('https://synth.example.org/doc/325', 'html', 'table small value column merge hash column batch agg row slow query part window table key value batch vector key part row row column slow sort line slow join big sort customer a slow spark filter stream table part part group table hash customer batch the customer key value part batch vector hash row value query a key spark big', 328, 3, 1),
-      ('https://synth.example.org/doc/326', 'html', 'scan key hash merge line key vector value query small hash agg hash window scan table line fast group stream order small row order customer the the merge line line merge part group vector vector agg', 198, 3, 1),
-      ('https://synth.example.org/doc/327', 'html', 'group join merge row key stream fast row sort stream scan part filter window order data merge key order data small key agg stream table fast window query batch row small filter fast', 181, 3, 1),
-      ('https://synth.example.org/doc/328', 'html', 'join row big stream small the customer group window hash line slow a stream a table key fast order row query part merge big batch column slow the group data vector group sort agg vector vector line scan column big slow agg small slow table row a join table group small stream filter data stream line merge group customer batch query customer filter spark slow data agg scan a filter small join order value window merge order fast data stream sort vector group query join small row customer merge', 495, 3, 1),
-      ('https://synth.example.org/doc/329', 'html', 'merge batch big row sort hash scan window group query customer order a query row vector hash hash the query small vector agg window scan window stream big fast hash the agg stream query spark hash the query small group window value column slow scan window a batch big key data scan scan the sort order sort big filter a row customer value group key join', 353, 3, 1),
-      ('https://synth.example.org/doc/33', 'html', 'line column merge fast hash fast spark fast merge the value customer query line join small a a line part line filter hash fast slow sort hash customer line column line batch data data customer scan query query a row sort sort slow line stream part', 247, 3, 1),
-      ('https://synth.example.org/doc/330', 'html', 'big agg order the group hash data the filter scan column data scan fast sort stream join join data hash a column slow order customer table big merge hash key column row window line column hash data slow vector small the key line slow value table value merge sort query filter data join big small table part row query', 316, 3, 1),
-      ('https://synth.example.org/doc/331', 'html', 'customer value small join query row key window row merge data small join window fast customer customer big column fast vector order value line vector agg window stream a stream small key table value order vector stream fast group slow scan value key filter stream column part line spark filter filter', 300, 3, 1),
-      ('https://synth.example.org/doc/332', 'html', 'spark column vector stream key line value order big a stream small sort vector row scan column hash a column customer small table query column key row customer query stream batch scan column spark group hash', 207, 3, 1),
-      ('https://synth.example.org/doc/333', 'html', 'hash query data big table agg merge spark order column sort sort window window merge key column small fast the customer small big join row value fast hash window sort value slow', 177, 3, 1),
-      ('https://synth.example.org/doc/334', 'html', 'join key value small join row a data query vector join line join agg a filter part order merge part sort stream line the filter slow stream the line stream big fast the fast a filter agg vector line key value agg line customer value sort a table vector key filter filter agg a big order window a column batch table batch a fast group part merge table row agg big merge spark customer value batch stream merge fast filter filter fast column small slow slow agg slow slow the join batch', 484, 3, 1),
-      ('https://synth.example.org/doc/335', 'html', 'column slow filter data customer agg agg hash part data filter agg data part a stream agg join row agg table customer key batch small value agg slow small a window slow small hash fast data customer value query small fast part vector sort merge hash row agg a hash a window scan filter small vector small vector merge batch a', 325, 3, 1),
-      ('https://synth.example.org/doc/336', 'html', 'table hash customer column query line scan merge data order big column spark order agg vector batch table join merge value group small data fast spark filter group agg line join sort spark row group spark row scan column line data stream customer scan sort data agg spark slow customer order the line window table key filter data join hash filter key line query scan a key big', 376, 3, 1),
-      ('https://synth.example.org/doc/337', 'html', 'filter part column group vector merge key sort vector line filter data spark vector small customer window spark hash line the group key a join a scan slow value column stream merge stream join vector row fast spark merge slow table line small', 242, 3, 1),
-      ('https://synth.example.org/doc/338', 'html', 'data join query spark value row table hash customer group a row scan order the value a join', 91, 3, 1),
-      ('https://synth.example.org/doc/339', 'html', 'vector vector column stream key scan part batch customer customer window table group spark filter row value vector column slow hash table customer part value row hash key hash row a table', 187, 3, 1),
-      ('https://synth.example.org/doc/34', 'html', 'sort table merge row order scan small vector customer query window column slow line sort small slow fast batch merge row filter query stream slow spark order agg big', 165, 3, 1),
-      ('https://synth.example.org/doc/340', 'html', 'batch group hash group data row customer window merge customer big spark batch big data join batch column slow batch join vector order line value row customer agg stream spark fast hash order group filter agg small merge big line key a spark order', 247, 3, 1),
-      ('https://synth.example.org/doc/341', 'html', 'part part small row scan fast customer slow window small scan table column group hash query window value row agg value value part data stream batch vector a big row scan batch line the sort stream query slow order table merge customer sort scan agg group fast row hash fast sort part join order vector a key agg batch data sort slow data order query the vector a sort row part agg value batch merge hash merge batch window scan', 427, 3, 1),
-      ('https://synth.example.org/doc/342', 'html', 'value vector hash key vector group agg value table key scan stream scan window hash part value scan vector sort join', 116, 3, 1),
-      ('https://synth.example.org/doc/343', 'html', 'row slow data data merge small part data a table the order line scan hash scan filter hash hash batch customer a batch customer data spark filter line part', 155, 3, 1),
-      ('https://synth.example.org/doc/344', 'html', 'row key query part order hash agg customer customer fast line query line hash small window fast query join sort key value scan part key part the slow slow group batch group fast join column vector small group join table a merge big order line row spark table vector a hash sort sort customer key group row sort vector small spark batch scan query join key key column part window customer big row agg stream merge scan', 417, 3, 1),
-      ('https://synth.example.org/doc/345', 'html', 'line data vector sort line scan filter window agg slow window query merge customer order stream table batch stream part value window window join small scan slow a scan row a order data join row scan customer key a big hash vector part window agg window query the slow column row small part agg stream stream part scan order', 323, 3, 1),
-      ('https://synth.example.org/doc/346', 'html', 'fast data customer filter group query batch data batch scan vector filter part join column join data fast data part order query table value agg fast vector spark a merge column key column big order part batch merge key agg stream value hash scan order order key filter batch spark key order row vector customer key spark hash the batch order customer join sort a window key slow table batch sort line slow key', 409, 3, 1),
-      ('https://synth.example.org/doc/347', 'html', 'filter query agg query fast spark big the vector slow line agg stream part query scan column slow slow scan spark value query hash value table hash sort order table row window value query batch hash group agg query join batch column hash query query batch data fast hash batch batch', 282, 3, 1),
-      ('https://synth.example.org/doc/348', 'html', 'batch order stream batch value batch value slow hash data big part group small key customer part fast fast join big spark query row', 131, 3, 1),
-      ('https://synth.example.org/doc/349', 'html', 'query row join hash agg column big agg value query scan batch scan sort spark a sort the the order batch a data key spark query small stream small spark fast scan sort hash order the order merge data fast merge the filter spark value order customer batch the the line column line value line spark stream the column hash part merge table line line row table column order sort query column window fast window filter sort spark batch data small column fast the', 457, 3, 1),
-      ('https://synth.example.org/doc/35', 'html', 'filter join join big agg key filter a a table big table key data value join window small fast part window part filter filter row small big customer slow data value data group group merge big customer slow fast hash slow join customer data row the fast agg row row hash table scan a agg column hash value merge row sort spark key row sort merge stream customer small hash the line column key group query row customer line table customer row slow key key', 452, 3, 1),
-      ('https://synth.example.org/doc/350', 'html', 'batch join sort value query sort sort stream fast vector sort fast part the group table scan fast batch hash line key filter group filter customer small big customer hash vector a part big table vector sort hash join spark sort window customer vector table merge slow vector join a window big fast fast agg slow stream customer row join big sort customer slow a batch part the fast part row spark big join stream sort sort small window query big part stream scan data', 467, 3, 1),
-      ('https://synth.example.org/doc/351', 'html', 'a order data query query fast vector data table big window value row join filter filter row sort slow slow scan column value filter query line fast agg line window key sort batch spark order table row small key stream scan customer vector part small line key scan spark slow agg agg value big scan window line table value query join order column group big group stream', 368, 3, 1),
-      ('https://synth.example.org/doc/352', 'html', 'a fast order part the sort small group group filter group join filter merge order row slow filter row vector vector stream hash the value merge big query join part part join window query vector a row join filter value row part stream the row group stream line fast big small table data customer hash line column fast hash slow spark the small sort filter customer stream a filter key big table part the small row customer stream filter window vector small agg data line sort row agg line data column join vector slow join customer order', 536, 3, 1),
-      ('https://synth.example.org/doc/353', 'html', 'customer a batch agg order spark sort row order column stream small column spark a filter row order window batch row hash customer data spark line the line part join fast a key big spark merge order fast order big hash key row join spark batch the big line stream scan agg vector small value small customer a vector', 315, 3, 1),
-      ('https://synth.example.org/doc/354', 'html', 'customer slow sort vector spark batch query column batch key hash small spark vector key fast data the query customer hash scan join the group slow big slow filter join table small column small fast order window order customer window sort hash fast row small line part slow scan customer sort part the key scan a stream data slow row merge a stream vector part customer value line vector agg window data big key order customer', 426, 3, 1),
-      ('https://synth.example.org/doc/355', 'html', 'spark order scan the batch the group value value group customer table customer scan value group customer filter group query filter a sort key window the key query hash value filter spark line sort line big query big small query join filter group small batch spark a stream key line sort group customer the value slow customer join window window customer', 353, 3, 1),
-      ('https://synth.example.org/doc/356', 'html', 'key key fast order small group value big batch big merge customer join window sort group join customer line part group key a table small a sort column spark table fast join hash spark join spark column line key big big a spark sort data key sort group window sort order customer the batch hash customer slow query part small scan row value key small group agg', 359, 3, 1),
-      ('https://synth.example.org/doc/357', 'html', 'hash a sort filter key hash batch order line join part stream column agg vector merge part column sort spark merge table sort part small sort line group join a window column group value join join part filter small sort fast fast fast the window big data', 253, 3, 1),
-      ('https://synth.example.org/doc/358', 'html', 'join line fast join spark part batch merge scan spark order', 59, 3, 1),
-      ('https://synth.example.org/doc/359', 'html', 'sort part part small slow join line sort part data customer vector spark small join scan window agg agg vector merge join small merge row batch value scan merge table part line line filter slow order merge line column customer vector agg small the join column vector query column a agg value table sort a hash the agg scan merge', 328, 3, 1),
-      ('https://synth.example.org/doc/36', 'html', 'stream value data value line merge customer line key merge join data table customer stream sort group batch stream slow window customer', 135, 3, 1),
-      ('https://synth.example.org/doc/360', 'html', 'vector value small data merge group hash stream part fast spark filter sort fast fast the group merge stream window hash a window line filter agg small hash batch line row join big group sort group table agg merge customer order join spark value stream sort stream batch part join the window column order group vector key fast value batch line sort a stream window table column customer group a vector spark hash small batch fast big value the', 443, 3, 1),
-      ('https://synth.example.org/doc/361', 'html', 'window row scan scan table vector row column key data vector key stream part table join sort customer group part value column value spark merge merge column customer slow scan small query big value scan scan agg row agg line fast spark data filter small vector a window join scan part batch agg fast sort join vector spark scan slow column merge batch scan window', 363, 3, 1),
-      ('https://synth.example.org/doc/362', 'html', 'slow data group query spark big join vector merge merge sort table group the sort', 81, 3, 1),
-      ('https://synth.example.org/doc/363', 'html', 'merge table column vector part batch vector row customer filter customer merge customer sort value spark merge batch column vector slow slow agg customer the scan the agg vector big big order data data batch big big line filter slow sort key hash table big window part slow table join key part filter part sort join column scan agg hash a window batch order', 357, 3, 1),
-      ('https://synth.example.org/doc/364', 'html', 'fast column column line big batch order order part key vector a spark line a customer sort vector key join query window slow table customer stream window column query merge table window fast stream value small slow sort table line data batch table key slow data customer', 270, 3, 1),
-      ('https://synth.example.org/doc/365', 'html', 'vector spark agg part merge line fast customer slow sort batch hash', 67, 3, 1),
-      ('https://synth.example.org/doc/366', 'html', 'line column value order line table vector table table join customer row vector group value batch batch column line big small small filter merge small order value join filter agg row slow stream group agg table filter hash line fast fast the stream vector small join slow part filter scan a order table sort data', 311, 3, 1),
-      ('https://synth.example.org/doc/367', 'html', 'scan key vector a row hash stream row hash scan filter vector agg value customer spark sort batch filter big group the line the small key batch stream merge customer merge row table order join row query hash small', 213, 3, 1),
-      ('https://synth.example.org/doc/368', 'html', 'agg fast value batch spark sort hash line spark stream table spark stream', 73, 3, 1),
-      ('https://synth.example.org/doc/369', 'html', 'sort join join small group customer hash spark a order part query hash hash merge vector scan sort a part the the merge batch query spark hash vector filter batch spark the small stream line scan join stream fast customer fast scan batch sort big slow table row column hash', 273, 3, 1),
-      ('https://synth.example.org/doc/37', 'html', 'data scan a stream small scan fast group part customer big line sort sort group order big order vector big join filter column merge fast column row column a value scan join query batch merge vector join merge order part order value group part table big order group slow small table merge row value batch agg row batch the sort order customer agg order slow group slow agg column', 378, 3, 1),
-      ('https://synth.example.org/doc/370', 'html', 'part spark table order customer column table filter filter join column table scan big column customer sort spark sort sort window column table vector order scan vector merge batch spark key spark scan spark batch order query data sort stream scan', 246, 3, 1),
-      ('https://synth.example.org/doc/371', 'html', 'window big row window big small the column sort agg batch row line value join key group table order part join value row scan customer batch order batch row big vector sort row customer vector table fast a fast hash join big merge value part vector agg group part table key join sort join agg table filter table stream table part stream line the query', 350, 3, 1),
-      ('https://synth.example.org/doc/372', 'html', 'column big group sort fast agg agg row key data row value agg a slow small stream join data row sort batch row slow hash customer merge window', 142, 3, 1),
-      ('https://synth.example.org/doc/373', 'html', 'merge line batch table the filter row a row big row column sort query line scan vector column row the column column spark line customer join hash fast key stream merge vector value merge big hash slow order batch join slow window table column the batch join line column vector join vector vector group query group part spark value fast window table the hash the row query merge data value', 388, 3, 1),
-      ('https://synth.example.org/doc/374', 'html', 'order filter query key vector query scan slow big join customer filter group order sort stream batch filter part stream slow vector order column part data join value slow table small', 182, 3, 1),
-      ('https://synth.example.org/doc/375', 'html', 'stream row row order the slow merge key part query scan merge window sort group column scan part big scan join query table merge table table order sort slow filter sort filter small filter order small fast query fast spark batch agg query part value batch row batch the vector order a row spark window group merge a row batch filter small join', 343, 3, 1),
-      ('https://synth.example.org/doc/376', 'html', 'data join join scan vector sort stream filter fast key fast data row the big the slow big batch order filter agg agg spark scan join data spark join batch join slow filter value column column group filter hash big hash batch row a key key line spark order stream data table window row data batch the data column stream window sort row group spark order window batch a', 367, 3, 1),
-      ('https://synth.example.org/doc/377', 'html', 'hash sort filter customer join slow key filter part table key the window sort sort column merge order big hash row fast spark spark agg group scan part customer spark data fast window scan order big part join hash stream part sort dup', 234, 3, 1),
-      ('https://synth.example.org/doc/378', 'html', 'sort small table scan stream order spark big vector the window merge a fast query agg join filter agg merge value big big query scan small join row batch query data a order row value hash the order line vector batch a small part filter stream join slow row sort vector vector order batch line value scan group sort a join window line the', 337, 3, 1),
-      ('https://synth.example.org/doc/379', 'html', 'spark stream fast join window hash vector scan value small slow slow the the hash spark the batch filter join slow filter filter row scan order customer batch row table hash line slow query scan table fast query vector filter small data window fast filter key merge big agg big window value merge line stream spark batch scan query agg query merge key fast row spark big window customer slow table value', 403, 3, 1),
-      ('https://synth.example.org/doc/38', 'html', 'merge group small line window customer slow agg order key join group window window the part customer window merge spark fast join order group big table the scan join line line small spark customer a scan', 203, 3, 1),
-      ('https://synth.example.org/doc/380', 'html', 'window the sort small data stream small hash column value line customer slow slow window scan query merge column table vector group a the table order small customer hash batch part column fast vector customer a slow window part big order sort sort slow row row small window line merge spark column small line stream agg a sort slow line small window big part big agg query line agg order query group filter fast a spark value filter agg window', 443, 3, 1),
-      ('https://synth.example.org/doc/381', 'html', 'scan join data batch agg agg filter batch order slow column merge spark column batch group vector data filter scan value group row group group customer batch row scan filter batch big line group sort part filter merge small row agg group key data merge small hash row data slow customer table merge row column order part hash filter scan line group hash', 353, 3, 1),
-      ('https://synth.example.org/doc/382', 'html', 'customer slow key data filter a spark group scan order row row column column slow column row batch small fast the hash merge the agg', 132, 3, 1),
-      ('https://synth.example.org/doc/383', 'html', 'the a column batch customer value vector line group data batch window filter fast small fast customer group data column line agg column key query spark hash stream vector a data customer filter join stream customer small row part big line filter hash dup', 254, 3, 1),
-      ('https://synth.example.org/doc/384', 'html', 'key agg part sort join sort big small customer stream small group window hash data order agg', 92, 3, 1),
-      ('https://synth.example.org/doc/385', 'html', 'customer big scan line customer merge hash scan table a vector a filter sort group the stream merge query line filter customer small line customer table query batch order part big hash query customer customer join order merge agg line sort slow data row big column big spark agg table sort slow batch customer fast row customer group the merge scan fast customer hash stream order a window batch the', 399, 3, 1),
-      ('https://synth.example.org/doc/386', 'html', 'filter hash row line join query window data customer slow merge row fast customer slow column join filter vector agg batch fast a data fast line slow big value merge order row column sort hash query scan part merge big sort a scan stream data column key data the value data window a window the fast table spark spark slow sort column column agg a filter customer slow vector data line big key big stream small the part filter the batch the fast agg spark customer a spark', 471, 3, 1),
-      ('https://synth.example.org/doc/387', 'html', 'hash query group row line stream join window key fast query line line line customer a join vector hash key big row data sort small big agg small small customer row order scan vector query filter spark key big', 208, 3, 1),
-      ('https://synth.example.org/doc/388', 'html', 'line sort merge group filter sort order spark column query column merge column scan big a row value agg sort scan hash slow table part big vector query batch row window data merge sort agg agg scan sort scan big sort query customer customer part data customer agg agg hash table data group value order the filter group merge window slow agg slow', 345, 3, 1),
-      ('https://synth.example.org/doc/389', 'html', 'merge join table a slow part table column merge group group column query sort filter spark big a merge customer part row query query fast filter big dup', 152, 3, 1),
-      ('https://synth.example.org/doc/39', 'html', 'small window sort row column spark the hash slow small hash join merge scan a row spark small vector filter query join batch', 124, 3, 1),
-      ('https://synth.example.org/doc/390', 'html', 'slow batch row a a the query merge customer value query small window sort merge data big agg window key part small small part value spark', 137, 3, 1),
-      ('https://synth.example.org/doc/391', 'html', 'window order spark column query order line small a query hash value agg part stream filter agg group column scan row a vector window slow column sort slow big order data data batch stream table order order key join data window data column', 238, 3, 1),
-      ('https://synth.example.org/doc/392', 'html', 'vector group column order window row key small query query line data order window customer table spark table hash big window line order', 135, 3, 1),
-      ('https://synth.example.org/doc/393', 'html', 'fast merge sort fast fast slow sort scan data group group table agg table customer customer part join spark agg column window small join data filter stream slow stream data data row table a the vector customer spark batch order query agg stream stream batch vector join slow customer join value fast scan filter scan group value slow batch vector window batch fast agg batch column vector slow join stream stream join line order sort fast column merge spark big dup', 465, 3, 1),
-      ('https://synth.example.org/doc/394', 'html', 'query customer join group part column fast data window hash hash group stream agg line part data sort row vector data scan agg order window the big the merge vector vector table table join data table table value line window value slow big data merge window window fast line agg table line window hash slow stream join column window batch value customer line window vector data slow batch order scan small', 404, 3, 1),
-      ('https://synth.example.org/doc/395', 'html', 'group customer table order hash customer a merge scan batch query fast window line filter spark small scan slow sort sort filter window filter query slow the query join batch spark sort table join line slow column slow query merge table window order agg fast merge a sort stream row customer sort group customer agg column filter spark column stream value small part customer column fast spark stream table stream merge spark spark merge batch group big small column filter merge', 479, 3, 1),
-      ('https://synth.example.org/doc/396', 'html', 'big small batch small filter data data hash column part agg hash table row stream group filter data group the join join window scan vector value order window table join big stream spark fast vector join key stream big merge query query spark window', 248, 3, 1),
-      ('https://synth.example.org/doc/397', 'html', 'table key data merge group agg hash slow key column column merge slow small column stream window big merge the part fast scan stream scan window the order order key spark column part part filter group column fast merge a window batch fast agg filter key part order query merge window filter key', 294, 3, 1),
-      ('https://synth.example.org/doc/398', 'html', 'sort group table column merge line slow big small column table the filter hash query row fast window hash', 105, 3, 1),
-      ('https://synth.example.org/doc/399', 'html', 'column key sort window stream row customer sort row batch agg join row stream batch fast spark sort key customer agg big customer slow window row vector a vector spark column data window part key batch hash big order key agg column scan small table a row query data row small spark part table value agg vector', 309, 3, 1),
-      ('https://synth.example.org/doc/4', 'html', 'data query small row slow row data stream filter small sort hash stream batch big big group order column part table stream group table join batch join window window fast agg line order group spark window part agg the column line the data row customer', 250, 3, 1),
-      ('https://synth.example.org/doc/40', 'html', 'order scan line hash line window column customer spark query the value spark spark query value table line vector column data the part small customer slow window filter column big merge window value column line stream hash order small small agg group merge the join column row vector sort stream order big filter value order hash a group customer window the batch data slow hash hash slow big group group vector order hash', 421, 3, 1),
-      ('https://synth.example.org/doc/400', 'html', 'data line line query batch the slow window hash line part fast scan group order join order fast line small agg agg filter batch column', 134, 3, 1),
-      ('https://synth.example.org/doc/401', 'html', 'key join the a line line batch window filter stream table hash line slow spark part line window filter column slow vector value column scan row scan line key vector group fast slow line spark key batch filter scan line stream key data slow small filter hash window vector batch customer stream group stream vector sort table customer part part value the hash customer window window sort data fast merge window small order sort stream hash', 438, 3, 1),
-      ('https://synth.example.org/doc/402', 'html', 'big scan sort row part line customer group line group slow join big batch sort query column part big window slow row fast the the a customer the line spark line', 160, 3, 1),
-      ('https://synth.example.org/doc/403', 'html', 'order window join filter fast hash fast merge a agg data sort slow query row fast fast sort part the slow join spark vector window agg fast batch stream order spark stream line customer data fast order window filter spark fast join spark window hash table stream table big scan scan part row hash part sort window group scan column window small row small value batch merge join part big sort batch batch slow stream part slow filter query small data customer hash scan slow', 473, 3, 1),
-      ('https://synth.example.org/doc/404', 'html', 'value slow data stream agg stream join table key scan small slow big scan part a small key part a window row key order fast spark customer line vector line big row merge row data table hash merge fast scan hash small part', 221, 3, 1),
-      ('https://synth.example.org/doc/405', 'html', 'hash customer key part stream big table column row data customer customer query part batch group query small column column hash vector column the row big join sort batch row merge key data small a hash sort query row slow column a row batch value column customer the spark window line batch table stream small join', 314, 3, 1),
-      ('https://synth.example.org/doc/406', 'html', 'table customer hash vector value a order merge fast batch customer the filter agg merge agg line sort sort filter line fast fast a row scan a value customer sort row window small filter spark window stream part spark big order query big order small group a fast column the sort the order small column value part agg query spark value window merge column join filter spark group column join big hash row stream slow table batch slow sort sort column order order', 460, 3, 1),
-      ('https://synth.example.org/doc/407', 'html', 'hash table agg merge big key stream the order spark column agg table order sort merge query small batch scan', 108, 3, 1),
-      ('https://synth.example.org/doc/408', 'html', 'query query spark part sort slow batch line data line spark group the batch fast filter', 87, 3, 1),
-      ('https://synth.example.org/doc/409', 'html', 'small key a spark window hash small stream a part column row key table a hash line a small stream key spark line a data order data filter stream big hash join key fast sort row merge query join spark value customer value agg window table column value window scan a part agg', 273, 3, 1),
-      ('https://synth.example.org/doc/41', 'html', 'line group batch key merge join table batch spark column row sort the key batch fast batch a customer group agg filter vector a vector small sort join column customer part part column line order filter vector value merge slow filter window column table key agg vector slow stream key big batch the value batch value key agg line sort key', 337, 3, 1),
-      ('https://synth.example.org/doc/410', 'html', 'row order a table window value small sort a big table vector data value value sort query agg order the part column row order hash big row sort key line line window vector customer stream value line part window customer sort group merge filter query column customer order table batch scan data filter data row column group slow column spark order fast scan key agg data part order fast query big window a fast part', 413, 3, 1),
-      ('https://synth.example.org/doc/411', 'html', 'vector row spark a hash agg stream small order scan batch window table merge row key customer merge sort spark order slow query table part window sort table batch spark hash the column sort fast a group spark batch filter merge value slow query key agg order sort row batch join a join the agg hash row part part line scan value spark hash part big query a sort scan value hash value join window a fast part agg', 411, 3, 1),
-      ('https://synth.example.org/doc/412', 'html', 'agg row fast the table scan batch query column sort stream filter query part order data merge merge sort a line fast order line the table small a line sort data slow table hash part the the sort column row sort value group key part line spark the slow batch customer join window row hash value part row value join slow sort scan the fast join part a fast part small', 365, 3, 1),
-      ('https://synth.example.org/doc/413', 'html', 'merge group part scan row value column batch the table line customer small sort slow value slow hash data row slow slow key group window row a data slow small scan key row value query filter merge stream the spark spark join a slow hash batch filter value small value spark vector big the spark small sort value window key filter vector batch scan filter spark spark query big part merge table join row slow hash batch small dup', 428, 3, 1),
-      ('https://synth.example.org/doc/414', 'html', 'part batch slow window small part column part vector agg fast the agg window order line a customer hash fast table batch sort row spark small small key query merge customer query fast table data the data agg filter part sort customer sort table the small a vector data query filter column the value agg vector a hash agg window value a a fast hash table part line slow slow sort a fast spark a slow group big', 408, 3, 1),
-      ('https://synth.example.org/doc/415', 'html', 'the customer spark slow a batch slow column vector part customer a table part slow sort filter window vector customer line stream order spark data big agg big query query small row value part order part the query big stream slow data key key scan big join scan column spark big hash fast value scan order the part', 313, 3, 1),
-      ('https://synth.example.org/doc/416', 'html', 'key query order sort the slow sort spark merge query slow agg the customer row scan join key join line big group vector agg scan merge group a order stream batch window agg fast column customer merge order group query slow agg key filter scan customer merge the column sort key big small', 287, 3, 1),
-      ('https://synth.example.org/doc/417', 'html', 'window query customer merge customer batch part batch big customer order stream a row row customer table key key sort query line data filter big join merge sort join data batch vector hash data merge batch query a fast stream agg key line slow fast customer join filter small value batch row the part scan slow small customer spark stream batch value customer fast fast value part join stream join data table key join fast agg agg group customer join merge window fast hash line hash table agg table a column stream sort', 520, 3, 1),
-      ('https://synth.example.org/doc/418', 'html', 'agg row order batch line row small batch part agg slow small the data column filter line customer join window stream small small table vector stream spark stream vector stream vector batch query filter row agg join merge order small batch batch group join line key line scan vector customer fast join part column part part data spark table line column batch scan sort batch small small filter line slow agg join group key window line order', 439, 3, 1),
-      ('https://synth.example.org/doc/419', 'html', 'row window data filter small slow join batch hash data stream line line spark query part value customer big column', 114, 3, 1),
-      ('https://synth.example.org/doc/42', 'html', 'group column key window join group window scan order join scan join scan group merge the column window order fast fast big big batch sort query group big spark sort table query a agg sort slow window order column row value data agg agg query a scan column fast window line customer sort batch row stream', 303, 3, 1),
-      ('https://synth.example.org/doc/420', 'html', 'fast merge sort fast fast slow sort scan data group group table agg table customer customer part join spark agg column window small join data filter stream slow stream data data row table a the vector customer spark batch order query agg stream stream batch vector join slow customer join value fast scan filter scan group value slow batch vector window batch fast agg batch column vector slow join stream stream join line order sort fast column merge spark big', 461, 3, 1),
-      ('https://synth.example.org/doc/421', 'html', 'key line sort small row query window spark filter value agg window query table merge order customer scan sort line small hash merge row merge small value small small part row scan table join order table group scan a merge big join join merge order batch stream sort line data data column scan join vector scan merge agg data stream row spark hash stream merge row stream group batch data filter line sort hash batch line sort order a query customer column line', 460, 3, 1),
-      ('https://synth.example.org/doc/422', 'html', 'join group window group value batch row data batch sort value column stream data big filter order window scan scan spark batch order data group the agg value column customer filter spark batch line hash table vector line group query row row group a merge spark a group fast hash line small row part row order sort agg fast window value table filter batch hash merge', 365, 3, 1),
-      ('https://synth.example.org/doc/423', 'html', 'join order part group merge customer spark data line data the filter stream agg hash key batch data data window big row agg value sort small line spark merge agg row customer a vector value group vector a column filter window customer small vector spark fast scan value merge small a big column group data scan small query small filter group table scan order fast', 363, 3, 1),
-      ('https://synth.example.org/doc/424', 'html', 'join sort merge row stream part fast the table join key fast spark small part table slow window group customer window table stream vector group the data row customer fast a hash spark spark vector agg data hash row the merge window merge key small big row filter slow key order stream big merge key big stream query customer window row batch column group agg stream vector a filter vector batch merge customer', 409, 3, 1),
-      ('https://synth.example.org/doc/425', 'html', 'a slow line join vector spark batch column group column window hash batch small small small slow big the fast row vector value data', 131, 3, 1),
-      ('https://synth.example.org/doc/426', 'html', 'merge fast sort fast value order batch small part line group part filter merge a a window filter order join slow batch spark group table order filter line spark vector big window row window data sort a spark table small big stream column data batch big agg fast a group key vector sort batch filter window order group column stream slow big key key scan row row column merge part sort filter vector window the query customer line stream key hash stream', 452, 3, 1),
-      ('https://synth.example.org/doc/427', 'html', 'a key window small data column part part stream query slow data table row big big join row a order scan big join part a hash column a part column part the column table join scan the spark column filter order join column column spark vector scan agg spark agg the hash spark spark group merge sort slow group merge batch sort spark sort sort row data join line window line query batch filter query window part query group', 420, 3, 1),
-      ('https://synth.example.org/doc/428', 'html', 'filter slow row sort group row fast big hash part hash group data filter scan scan spark customer vector value column hash column part big batch window line table merge column table table merge order scan key small filter query data query group stream column customer slow column', 279, 3, 1),
-      ('https://synth.example.org/doc/429', 'html', 'query data column key key a batch big fast filter scan data window big scan query group stream merge filter fast agg customer spark line slow part spark line join vector line stream value group data column group scan column part column agg the scan table value small stream stream query column small row row group stream sort table line join agg fast vector query merge key customer row spark big query key value stream column order small small order column spark scan merge big merge spark line hash order line customer part fast filter', 537, 3, 1),
-      ('https://synth.example.org/doc/43', 'html', 'stream group small the filter part scan slow fast join small table sort query key window spark merge data part row group agg batch stream fast row query', 152, 3, 1),
-      ('https://synth.example.org/doc/430', 'html', 'customer sort value spark big sort agg table spark value fast slow join hash merge column customer part customer join vector table slow row slow column fast order data agg stream data table group stream agg key table big vector spark the small join join query row window agg a small table filter spark column order agg the window group hash batch window a group batch fast hash the table scan stream', 399, 3, 1),
-      ('https://synth.example.org/doc/431', 'html', 'vector spark big order slow part hash order the order batch small merge part table table query vector value scan fast row order join stream batch spark filter column the sort vector a part row slow hash fast customer the data join slow part agg query value row join part order group table value small column', 307, 3, 1),
-      ('https://synth.example.org/doc/432', 'html', 'scan hash agg table small stream vector query data order fast window fast query merge key order spark slow vector small stream customer group value big fast group fast merge window hash line spark line data row row agg fast agg slow join big line stream a part spark line hash small customer part the sort small spark big value part stream query column column', 359, 3, 1),
-      ('https://synth.example.org/doc/433', 'html', 'the slow join table batch merge slow customer slow slow vector part customer query column agg table small group fast window table value spark agg agg value window big data line', 176, 3, 1),
-      ('https://synth.example.org/doc/434', 'html', 'column query key big vector filter line fast fast a filter row fast scan row data small spark spark join key table line window value big slow table key order hash agg big order fast scan slow data vector part sort merge column merge sort filter key hash slow data big big query the window batch small hash part scan data value scan stream line hash agg customer customer join table small a table small merge order slow scan', 423, 3, 1),
-      ('https://synth.example.org/doc/435', 'html', 'part stream agg scan table column fast sort merge data the part vector row part column line batch agg hash window fast spark slow hash query join scan order merge join', 167, 3, 1),
-      ('https://synth.example.org/doc/436', 'html', 'group row window agg sort fast row the part column window table order sort part value row column scan small small order the group stream agg order batch scan order group part line merge table line batch scan filter row scan batch big row window merge agg group small a customer', 277, 3, 1),
-      ('https://synth.example.org/doc/437', 'html', 'order data value fast batch row customer table big join spark scan hash key merge small line table scan merge order spark data table value sort key query the customer table order column key line the fast sort filter agg hash join fast value small data row key line fast slow spark group vector data big group order fast part window fast batch data order window spark part a table query batch key line join key the value customer table small', 440, 3, 1),
-      ('https://synth.example.org/doc/438', 'html', 'fast line order value merge part column big vector stream scan window join hash sort vector small hash query agg vector row merge part data vector merge key query slow fast', 172, 3, 1),
-      ('https://synth.example.org/doc/439', 'html', 'group line batch small batch join group spark a batch order filter spark scan big scan group stream table hash window column a line vector row customer agg hash window filter the query', 184, 3, 1),
-      ('https://synth.example.org/doc/44', 'html', 'data data sort agg scan value the hash column line filter column data slow stream a merge row line row stream value order filter', 128, 3, 1),
-      ('https://synth.example.org/doc/440', 'html', 'customer order the join part sort order filter filter fast group agg batch small spark a value merge hash customer key small spark slow window agg merge merge big order batch group line stream column line stream query customer batch value data', 243, 3, 1),
-      ('https://synth.example.org/doc/441', 'html', 'slow window small filter merge order order small group sort hash fast fast customer spark stream line batch fast part scan big column vector part value hash vector order big spark fast sort batch spark slow slow query row join group fast batch batch agg row table agg part order line agg join filter merge part query group slow data table data column group fast join query spark filter slow line a slow line line data the line group merge small vector part the join line line column line big join table key spark group vector vector row order', 542, 3, 1),
-      ('https://synth.example.org/doc/442', 'html', 'stream query order value part query spark batch query the table batch agg window line key big query a window sort vector scan data sort join table column batch agg slow order key spark spark window table a vector table join hash line data data query stream the spark join stream the data key fast spark scan data line filter customer line line spark order stream scan table key the value a group stream data the the group fast small filter line scan order', 455, 3, 1),
-      ('https://synth.example.org/doc/443', 'html', 'big filter a the row slow sort a a filter a fast part hash window order merge data join column join key customer slow agg query line filter slow merge order key window column order column hash filter data table column column query join value stream vector key column window filter', 280, 3, 1),
-      ('https://synth.example.org/doc/444', 'html', 'key filter vector join order batch key value merge column slow the row order small group data the join value stream slow customer window column vector window the data scan fast agg line join customer group big stream spark scan window the key vector key filter column data scan window value order the window vector group join row spark big the group line window batch value fast agg key sort column a window data column', 419, 3, 1),
-      ('https://synth.example.org/doc/445', 'html', 'small scan data agg query fast row scan spark row filter fast fast merge query hash value customer scan value key scan row filter a part value table row spark the part table stream fast scan part vector key row table part window table row group column hash small fast a table spark filter line data big slow', 307, 3, 1),
-      ('https://synth.example.org/doc/446', 'html', 'data data sort agg scan value the hash column line filter column data slow stream a merge row line row stream value order filter dup', 132, 3, 1),
-      ('https://synth.example.org/doc/447', 'html', 'the column customer data stream slow window hash part a line group a small big data merge group value table fast hash big scan key filter key value join customer filter data small vector column merge a big hash hash vector key a line window query scan query the spark agg batch join small slow the small part small vector customer order row vector slow table big part stream window value spark vector join table merge spark line a customer data order line value a table line row order join value key table', 505, 3, 1),
-      ('https://synth.example.org/doc/448', 'html', 'slow line join group filter key sort group hash data the the stream join order a sort big key line value column data column scan stream vector query join fast agg line order slow group data stream sort sort data key scan query merge query fast query table scan query query part data the', 286, 3, 1),
-      ('https://synth.example.org/doc/449', 'html', 'filter the scan key row row spark window agg the stream key slow row row stream order vector part agg spark column row scan filter customer fast merge spark join group line scan', 177, 3, 1),
-      ('https://synth.example.org/doc/45', 'html', 'merge group part scan row value column batch the table line customer small sort slow value slow hash data row slow slow key group window row a data slow small scan key row value query filter merge stream the spark spark join a slow hash batch filter value small value spark vector big the spark small sort value window key filter vector batch scan filter spark spark query big part merge table join row slow hash batch small dup dup', 432, 3, 1),
-      ('https://synth.example.org/doc/450', 'html', 'the spark query slow small table slow value the customer fast stream stream the table merge fast small vector hash order data query join order', 142, 3, 1),
-      ('https://synth.example.org/doc/451', 'html', 'a part vector hash key vector join data scan order customer filter stream scan scan group slow stream slow query', 112, 3, 1),
-      ('https://synth.example.org/doc/452', 'html', 'row scan small the fast group stream key merge column key big a agg group agg table order slow column join small data stream sort batch agg key customer scan order the sort order slow column filter spark stream customer stream group key window join line row line line batch row batch agg the small value customer column batch fast merge row query line stream', 358, 3, 1),
-      ('https://synth.example.org/doc/453', 'html', 'filter table part window stream big hash stream filter row customer slow big small hash agg merge batch big part value agg data a sort slow data key spark agg spark agg window scan row data query value join group line customer vector batch stream vector merge a sort sort scan join line query fast a table window fast query table merge vector scan group the row column the value hash big order vector customer key row a big filter join data hash line key query window slow batch scan line row column sort the order line', 519, 3, 1),
-      ('https://synth.example.org/doc/454', 'html', 'stream row customer a batch small stream join stream key batch small the join group table group scan row batch a table fast filter filter big group merge', 153, 3, 1),
-      ('https://synth.example.org/doc/455', 'html', 'table small sort order small hash stream data big key group', 59, 3, 1),
-      ('https://synth.example.org/doc/456', 'html', 'fast join key hash spark key part join small agg data group stream value spark vector a part slow agg the big line', 114, 3, 1),
-      ('https://synth.example.org/doc/457', 'html', 'scan key hash merge line key vector value query small hash agg hash window scan table line fast group stream order small row order customer the the merge line line merge part group vector vector agg dup', 202, 3, 1),
-      ('https://synth.example.org/doc/458', 'html', 'key line join order value query customer sort slow part table hash scan line window group group data fast slow agg row window filter batch hash big data agg scan filter group a sort table column filter big big batch filter hash join part value fast a the table batch customer column table spark key window vector column big', 323, 3, 1),
-      ('https://synth.example.org/doc/459', 'html', 'batch vector row stream key big row a vector slow join value row small hash table group filter data part fast table batch table big order scan join filter join group hash value row column sort spark the spark group small fast line order part sort group vector agg hash customer big stream the hash hash line small table batch vector the vector query big merge join part vector', 376, 3, 1),
-      ('https://synth.example.org/doc/46', 'html', 'scan stream agg small customer merge customer value filter stream big small the key query filter sort customer join filter small part group vector value scan the table stream hash vector table part sort the filter value part row value line stream line vector group line join join row value fast join join the a vector merge vector key batch value a table slow merge line value table spark data customer sort filter small filter table vector query vector join scan small merge batch row vector', 492, 3, 1),
-      ('https://synth.example.org/doc/460', 'html', 'agg scan column key spark row vector table fast slow part agg slow slow agg row line small sort merge table scan big big merge query fast hash vector customer window filter small sort the row row agg batch customer slow spark hash group query merge slow table a', 261, 3, 1),
-      ('https://synth.example.org/doc/461', 'html', 'row merge vector big order line spark data stream customer row join row fast big order merge group query data group a table stream filter fast data filter agg filter table order big sort scan value fast small batch slow window a query agg spark column line customer line hash hash stream query customer table hash small line query order row value batch batch a fast vector', 372, 3, 1),
-      ('https://synth.example.org/doc/462', 'html', 'key line join order value query customer sort slow part table hash scan line window group group data fast slow agg row window filter batch hash big data agg scan filter group a sort table column filter big big batch filter hash join part value fast a the table batch customer column table spark key window vector column big dup', 327, 3, 1),
-      ('https://synth.example.org/doc/463', 'html', 'filter the column table big key row data filter scan customer fast query big slow big part join sort a table data big column data spark line spark window batch column key vector small merge hash vector scan merge group part column stream a slow key merge agg spark hash small query merge key hash part order batch line filter query scan a big a value agg the small query vector big merge column window table sort customer part scan sort sort column order big order query merge stream the agg', 491, 3, 1),
-      ('https://synth.example.org/doc/464', 'html', 'batch vector part the the table customer key merge part group row order scan group query slow part join group stream stream value window filter the big filter query order filter hash customer customer row', 204, 3, 1),
-      ('https://synth.example.org/doc/465', 'html', 'line stream query customer agg filter small agg slow a merge a order big stream join sort fast order a agg data stream window key fast window big sort merge agg big the stream slow agg part batch value sort group sort spark a the join group line batch scan scan customer big row window key scan key order table group big', 320, 3, 1),
-      ('https://synth.example.org/doc/466', 'html', 'batch data hash a value a agg batch vector the key batch sort customer fast hash line small scan sort row order group join scan slow filter agg merge column data big customer filter vector window scan batch join merge table part big stream filter spark line row a fast query filter data line filter agg customer window slow slow data line small slow key join table part order big query spark merge big window value part table big column filter fast table window key value', 471, 3, 1),
-      ('https://synth.example.org/doc/467', 'html', 'sort data data window agg filter stream order line big batch merge scan vector small join customer small query scan table batch agg order column sort agg small a hash hash agg order data column the hash agg the agg hash the slow spark small slow table a value query data join column stream stream customer spark a filter part order row vector column agg filter', 360, 3, 1),
-      ('https://synth.example.org/doc/468', 'html', 'column slow key order key scan customer row key key a sort line table big scan stream filter a stream join slow merge part column query key slow filter agg value window data column window key join small slow', 207, 3, 1),
-      ('https://synth.example.org/doc/469', 'html', 'row line batch part query query small stream order stream', 57, 3, 1),
-      ('https://synth.example.org/doc/47', 'html', 'a column merge small value merge agg column value hash data key slow part vector row value data value sort batch window sort join column hash spark line the stream filter agg scan query fast stream scan scan order data batch', 224, 3, 1),
-      ('https://synth.example.org/doc/470', 'html', 'agg customer key batch query data spark value row a column vector big table sort merge sort big scan query group part big filter vector order customer spark the merge join scan key merge column line small part customer key row small', 232, 3, 1),
-      ('https://synth.example.org/doc/471', 'html', 'batch small vector table small small row window big window line fast a agg column line hash query filter value agg part data hash big customer vector hash a a filter vector sort table column big a vector a merge sort query sort key fast part the vector table column sort scan column merge table column data slow agg join slow spark big', 335, 3, 1),
-      ('https://synth.example.org/doc/472', 'html', 'agg stream stream fast filter fast group small value stream row group group query merge query part merge big data group line sort part order the table line row data part fast fast part window query batch scan', 208, 3, 1),
-      ('https://synth.example.org/doc/473', 'html', 'batch agg sort sort vector sort big batch line a key customer part join order column stream group row window query merge hash table data spark join a window table line query key group small spark slow query the hash vector join key customer line customer row stream stream value line group big', 293, 3, 1),
-      ('https://synth.example.org/doc/474', 'html', 'order query key slow the fast spark key customer merge row value small spark data scan row the key column fast order agg filter value order a stream value fast line join key slow value agg merge window part order batch merge column spark value merge stream group sort big table fast spark big sort vector row a query a value table scan filter data scan the', 356, 3, 1),
-      ('https://synth.example.org/doc/475', 'html', 'line spark small key merge sort part query slow group data scan agg the value', 77, 3, 1),
-      ('https://synth.example.org/doc/476', 'html', 'hash vector part spark batch small a query join agg hash vector part filter hash key', 84, 3, 1),
-      ('https://synth.example.org/doc/477', 'html', 'line slow value window line window agg window data filter key column vector fast fast agg filter window line merge merge a a value value join scan data', 151, 3, 1),
-      ('https://synth.example.org/doc/478', 'html', 'window line join the batch vector value filter agg customer join vector slow stream key hash data group batch slow line window window vector query join small stream order sort vector scan fast filter value query the vector spark fast the group small filter small filter fast hash spark sort', 290, 3, 1),
-      ('https://synth.example.org/doc/479', 'html', 'sort merge line hash data sort spark vector stream order vector agg part stream order part vector merge small filter query customer table scan customer join batch batch key order part vector join the vector hash line slow filter line agg filter row part merge agg a join customer column row row column row line vector merge query hash batch vector line slow order agg line join spark query', 389, 3, 1),
-      ('https://synth.example.org/doc/48', 'html', 'customer fast big line big stream hash merge agg spark table line value part merge order row row filter scan row line value group customer sort row filter sort part', 164, 3, 1),
-      ('https://synth.example.org/doc/480', 'html', 'part key part order row order sort table a part column sort data filter stream small agg sort value sort filter order column sort vector key order column spark fast customer agg big small order fast row fast query table line customer batch join column agg query small vector small agg small merge customer vector column hash column query vector the data big a', 359, 3, 1),
-      ('https://synth.example.org/doc/481', 'html', 'line vector value agg group small row value line data slow merge big value line group', 85, 3, 1),
-      ('https://synth.example.org/doc/482', 'html', 'filter merge customer sort agg small key the scan the order data slow scan merge row window sort batch spark slow row data stream filter stream batch scan slow value', 165, 3, 1),
-      ('https://synth.example.org/doc/483', 'html', 'join table slow join customer a spark agg agg query key data line join spark window order join slow line a line value sort window a query line hash agg line group big group stream small spark vector small big the query fast batch sort table hash', 245, 3, 1),
-      ('https://synth.example.org/doc/484', 'html', 'value fast big row a scan the big vector value spark fast batch group big filter row big group line spark fast spark a window sort sort join line table small merge join data row stream column slow column data fast agg key', 221, 3, 1),
-      ('https://synth.example.org/doc/485', 'html', 'spark column window data query value group agg big order row sort table value row key customer small the vector small filter line', 129, 3, 1),
-      ('https://synth.example.org/doc/486', 'html', 'part stream agg scan table column fast sort merge data the part vector row part column line batch agg hash window fast spark slow hash query join scan order merge join dup', 171, 3, 1),
-      ('https://synth.example.org/doc/487', 'html', 'key window small key a small row stream part stream customer table merge hash fast key slow slow group value stream batch stream vector filter row vector filter key line slow vector scan group window hash slow query key agg agg join row hash column sort spark join data part fast hash query key data stream customer agg a', 321, 3, 1),
-      ('https://synth.example.org/doc/488', 'html', 'value join column join column window vector filter group merge vector customer customer data group agg agg table the the column part group vector query a join table part line sort value big spark slow sort', 205, 3, 1),
-      ('https://synth.example.org/doc/489', 'html', 'customer scan order fast sort small key filter big fast stream hash a slow group small part filter scan row group customer filter stream a table query scan value sort part customer vector fast row big key row line vector line vector customer filter join customer part data spark vector big spark agg big hash big join', 317, 3, 1),
-      ('https://synth.example.org/doc/49', 'html', 'query batch data batch slow key column scan sort vector big filter key data data sort column query a stream column filter fast sort join row key value column spark column small vector order table slow join part filter part small the spark hash table vector', 256, 3, 1),
-      ('https://synth.example.org/doc/490', 'html', 'window query a the sort part slow the hash hash key column spark part stream vector scan agg key join group data window spark hash part a data row hash stream a small customer merge column big batch group filter group row hash sort key window customer window group column', 271, 3, 1),
-      ('https://synth.example.org/doc/491', 'html', 'column batch data table merge column scan join sort hash customer order part value column join row stream the the batch join window filter row data scan customer small key key stream merge the part slow key line customer key row scan spark line agg small agg order spark value scan order filter the key stream order key merge query the key value vector scan row filter', 368, 3, 1),
-      ('https://synth.example.org/doc/492', 'html', 'value table vector merge merge window group column batch column big big query', 77, 3, 1),
-      ('https://synth.example.org/doc/493', 'html', 'filter join hash join query row customer row merge row data row a window a a the row sort line slow query a filter hash agg column value merge stream big slow order line column the spark spark merge join order query hash filter filter scan filter stream key agg agg row small join data join scan key value column order spark row spark big data a small vector the table vector agg scan big customer small window slow vector scan the key column row data customer line', 465, 3, 1),
-      ('https://synth.example.org/doc/494', 'html', 'sort table big stream merge row row slow small small hash fast data row batch value slow value small agg vector value table group order agg big row big spark order spark scan vector scan customer spark data', 206, 3, 1),
-      ('https://synth.example.org/doc/495', 'html', 'filter hash spark table the hash group slow value agg fast batch filter batch table key column join line table column big row batch batch vector agg customer vector the row data filter slow key column vector spark key agg window stream row column sort sort group spark value key spark window window key stream query agg value data hash big slow a row column table row vector scan line', 384, 3, 1),
-      ('https://synth.example.org/doc/496', 'html', 'the query filter column group vector the sort small vector slow part part slow data column value small vector column window part stream value a spark data order key hash batch table filter batch sort big a group filter window spark join order value column data sort spark merge the the spark group value value value column merge table data batch data slow order group slow sort vector vector agg part group fast order hash join value order key hash customer', 457, 3, 1),
-      ('https://synth.example.org/doc/497', 'html', 'window stream vector merge column order part table customer join batch data fast customer hash data customer join row small', 123, 3, 1),
-      ('https://synth.example.org/doc/498', 'html', 'value fast part scan fast value row row query merge row row filter the spark merge hash group query column merge spark part merge query join group big window slow merge group join filter data merge customer a spark spark scan table data query data window column join part fast small table data fast merge value value customer table spark small window stream scan line join spark scan group key data agg sort line group a agg big big stream key order column row agg fast merge value row', 485, 3, 1),
-      ('https://synth.example.org/doc/499', 'html', 'line big a small group the window sort group scan the spark fast agg window a big hash the key window group merge fast merge big vector a vector value line data spark', 166, 3, 1),
-      ('https://synth.example.org/doc/5', 'html', 'agg table spark hash sort key vector fast join value data agg query fast window batch filter query the group vector line agg vector line hash agg query column batch customer line column small stream join merge scan batch slow hash data sort column line big group stream small stream order small key scan group line', 314, 3, 1),
-      ('https://synth.example.org/doc/50', 'html', 'slow value window column data slow value column join merge column slow fast part filter table column row agg filter scan the value column query batch query table data merge group fast window fast the row order merge spark hash group filter filter agg spark', 256, 3, 1),
-      ('https://synth.example.org/doc/51', 'html', 'order spark filter hash query hash hash window sort hash scan key stream data order group column value batch a small customer the a merge slow column customer stream the big part batch the line customer scan value big filter join the part window the fast line value stream hash customer customer vector join sort data key hash', 326, 3, 1),
-      ('https://synth.example.org/doc/52', 'html', 'part join window part agg small column spark fast a the big agg', 63, 3, 1),
-      ('https://synth.example.org/doc/53', 'html', 'group slow table scan data part order value query part window small batch part hash data big spark spark value filter data slow the stream sort slow agg stream filter sort query value filter', 190, 3, 1),
-      ('https://synth.example.org/doc/54', 'html', 'batch a table small column the scan stream key spark query merge window hash scan key line sort merge spark line line merge column sort scan fast spark slow part order table group scan hash filter hash slow slow join line filter part part column batch vector sort column slow row group batch batch agg key query line spark big stream window query hash order', 357, 3, 1),
-      ('https://synth.example.org/doc/55', 'html', 'stream slow customer a row hash scan value scan a stream row window big window customer join data sort value a sort line merge scan part row window batch table data value line fast sort batch hash', 196, 3, 1),
-      ('https://synth.example.org/doc/56', 'html', 'merge key part vector data order window spark row table customer the merge order stream key join window query key data customer big column customer the column agg big filter agg order fast fast stream key value slow column query hash value group stream vector part filter a slow hash fast sort batch part agg small stream customer fast hash part small order group small spark row query agg batch line order part part vector part merge scan filter column big batch column filter batch fast line scan fast big batch stream window join the filter spark', 549, 3, 1),
-      ('https://synth.example.org/doc/57', 'html', 'hash the batch big scan a line stream a customer order order slow slow table line line agg fast a merge line data agg stream query column key batch a data window agg row sort hash merge window window query hash column order group scan hash vector table sort merge small scan agg big group sort slow sort value fast small vector hash join hash query fast group hash value part small spark the batch filter vector order small slow order filter group', 447, 3, 1),
-      ('https://synth.example.org/doc/58', 'html', 'column stream spark hash group join key table join window filter fast order data data big scan big table window order group query row vector slow small filter scan a filter data key agg window table the agg stream join agg fast big column a query key the data spark window spark spark order hash vector a sort line column spark order filter data filter order fast group group big group dup', 389, 3, 1),
-      ('https://synth.example.org/doc/59', 'html', 'join hash group join group big batch customer slow data spark batch a hash scan small fast a fast line a agg slow join', 118, 3, 1),
-      ('https://synth.example.org/doc/6', 'html', 'agg small scan table group scan order row merge scan part hash scan group fast', 78, 3, 1),
-      ('https://synth.example.org/doc/60', 'html', 'key sort data scan big agg customer value vector key vector window query hash column a batch row filter window customer agg value agg spark line batch group key scan row group value join value order spark a filter row customer merge batch group part stream fast slow key scan a big stream fast group data hash fast merge fast query agg key order slow customer fast part filter slow query data agg agg small small batch key spark hash column a hash key vector a scan agg part row filter the the', 493, 3, 1),
-      ('https://synth.example.org/doc/61', 'html', 'merge small small the order agg order table a order vector batch table value query data slow key part agg part table agg filter value slow table table value join slow column join agg table row scan row group batch a slow hash merge group filter big column scan a key batch agg table column agg value batch dup', 309, 3, 1),
-      ('https://synth.example.org/doc/62', 'html', 'group a order value fast customer merge table merge part slow customer fast fast join key order column big window filter column part column query join join fast big scan stream line filter slow a slow fast a key customer agg group window the merge sort column hash join batch fast column data merge slow small scan part key merge sort group key group key table part merge group join scan scan', 392, 3, 1),
-      ('https://synth.example.org/doc/63', 'html', 'scan small data slow scan query row slow big part filter window spark spark sort key batch group row part sort agg data data group spark filter column customer agg scan window column line window order agg slow filter key the merge filter big spark join order column slow customer batch hash key table scan line stream the scan spark row order sort fast column big query small merge column sort vector batch query row slow hash hash stream part vector batch vector query window join slow a the slow big table stream part the group', 529, 3, 1),
-      ('https://synth.example.org/doc/64', 'html', 'join agg join a table hash big sort filter slow key order data batch scan order table key filter query customer query scan filter value', 135, 3, 1),
-      ('https://synth.example.org/doc/65', 'html', 'the filter line row merge table stream table hash sort row agg line value filter query the agg hash', 99, 3, 1),
-      ('https://synth.example.org/doc/66', 'html', 'a row customer column customer vector hash row customer part the filter hash vector join query scan agg spark customer filter merge fast sort row fast table scan line small order row sort query key stream vector the merge part spark batch row query key group group slow line slow small group column table stream data the hash batch window hash customer', 352, 3, 1),
-      ('https://synth.example.org/doc/67', 'html', 'key stream agg row vector data join key line big stream column sort spark group small a window table merge agg scan big data group window spark the data the a small customer table customer data line big filter window batch slow hash sort value sort data small data column column join window merge hash vector big sort the scan column', 333, 3, 1),
-      ('https://synth.example.org/doc/68', 'html', 'key hash slow join value scan customer scan value the line stream customer value join vector vector join big scan row window hash a value customer fast customer column key part key order', 186, 3, 1),
-      ('https://synth.example.org/doc/69', 'html', 'column agg stream window order query filter scan value stream vector join the sort a a hash data fast data vector hash vector big customer batch line fast stream hash join slow table line big slow window a big value agg window row join hash customer table a the customer query join fast slow order query sort', 308, 3, 1),
-      ('https://synth.example.org/doc/7', 'html', 'batch window vector hash fast part window the stream key column batch filter merge filter key part hash customer scan line group scan fast spark scan vector order slow small data column scan filter data join small slow the join sort data vector row customer join vector the slow order agg order merge hash data agg line value scan scan slow join big order scan customer scan order the customer key slow', 402, 3, 1),
-      ('https://synth.example.org/doc/70', 'html', 'the column customer data stream slow window hash part a line group a small big data merge group value table fast hash big scan key filter key value join customer filter data small vector column merge a big hash hash vector key a line window query scan query the spark agg batch join small slow the small part small vector customer order row vector slow table big part stream window value spark vector join table merge spark line a customer data order line value a table line row order join value key table dup', 509, 3, 1),
-      ('https://synth.example.org/doc/71', 'html', 'filter vector agg vector filter query data group merge table batch window table fast stream join line batch agg small hash vector spark row big batch part vector fast value filter query sort key window customer agg table slow sort join group table sort filter sort scan table fast line hash window a key value join filter group sort row', 336, 3, 1),
-      ('https://synth.example.org/doc/72', 'html', 'hash sort filter customer join slow key filter part table key the window sort sort column merge order big hash row fast spark spark agg group scan part customer spark data fast window scan order big part join hash stream part sort', 230, 3, 1),
-      ('https://synth.example.org/doc/73', 'html', 'join part data agg part line row small order row the order query value line query filter agg value query a join big order line data the data hash batch spark batch scan data merge stream scan line table scan table scan small scan group data batch slow spark slow batch the query value stream column order window filter table join order line join join a table small the key merge fast scan batch the filter batch sort join scan batch big line customer small column value scan part customer scan slow join', 503, 3, 1),
-      ('https://synth.example.org/doc/74', 'html', 'data batch data key data column big key key slow', 48, 3, 1),
-      ('https://synth.example.org/doc/75', 'html', 'customer row a big scan small batch agg small join key key customer a merge part row stream big spark part a line small group big agg column key a query a scan customer column order slow the the sort merge the sort spark line batch line row slow line row column window agg row column customer customer key vector', 312, 3, 1),
-      ('https://synth.example.org/doc/76', 'html', 'table big column join key the merge join big query slow value slow key vector group key group order small key vector scan query query agg filter small group vector vector merge order join part filter hash stream hash data a key filter column spark join the column scan order a row value column fast batch key spark scan the line filter row value merge batch sort vector agg row part', 382, 3, 1),
-      ('https://synth.example.org/doc/77', 'html', 'a table window key batch slow column big order join fast the customer order hash the table value hash spark data hash fast merge sort scan part slow part column part part batch scan window customer column hash small join spark value sort stream the hash window spark batch spark batch query filter group join part query', 319, 3, 1),
-      ('https://synth.example.org/doc/78', 'html', 'data sort column stream big join agg small query hash window order filter value filter slow fast data customer line batch line row row merge merge part column column a vector hash order column merge fast vector row batch a filter key', 233, 3, 1),
-      ('https://synth.example.org/doc/79', 'html', 'sort filter the spark query group key stream fast a small order', 63, 3, 1),
-      ('https://synth.example.org/doc/8', 'html', 'the spark join stream a small order merge column group customer part a spark value customer the column the window big merge spark scan table vector order big order group join row order filter small column part group big value scan filter filter the scan value order column part sort filter merge column join customer scan table hash value window batch the small join small group order small vector row a big scan agg order fast row window slow group group spark part dup', 470, 3, 1),
-      ('https://synth.example.org/doc/80', 'html', 'part a vector hash big join the order big filter hash scan vector filter table scan column query fast stream customer a part filter scan data join merge join filter big the', 172, 3, 1),
-      ('https://synth.example.org/doc/81', 'html', 'batch column big order column table order table group filter small value table window group stream order part a stream window vector data spark filter part part group hash slow scan vector sort merge column line fast group row column query customer data row sort row window row agg key slow batch order table window data vector big data merge key join group', 357, 3, 1),
-      ('https://synth.example.org/doc/82', 'html', 'table batch merge small a key customer small line line stream fast merge stream customer hash hash agg filter column window row batch row part agg slow key batch query scan customer group merge line key small the order order row scan group hash data batch sort', 260, 3, 1),
-      ('https://synth.example.org/doc/83', 'html', 'value table hash query query line order batch customer column group a customer part slow', 88, 3, 1),
-      ('https://synth.example.org/doc/84', 'html', 'hash part order hash scan group sort data spark customer scan query a value table value small stream sort a the batch table stream key hash value slow customer customer customer vector small small stream hash query part sort value agg key filter sort big customer table data fast big data merge scan filter spark part a sort a spark agg spark small batch stream window fast sort small batch window batch', 403, 3, 1),
-      ('https://synth.example.org/doc/85', 'html', 'row big table table part customer sort query a agg column the a merge the batch small fast small batch order big table hash batch table small row agg big a', 155, 3, 1),
-      ('https://synth.example.org/doc/86', 'html', 'value join merge window value value vector filter batch spark vector filter sort row slow query group customer data value window slow line', 138, 3, 1),
-      ('https://synth.example.org/doc/87', 'html', 'query filter vector spark scan part join group batch fast order value slow window order filter row key part group a batch column', 128, 3, 1),
-      ('https://synth.example.org/doc/88', 'html', 'customer table group stream row scan row fast fast batch column part fast agg the merge scan sort filter vector fast hash window line vector vector stream column fast merge column merge fast join column sort sort query join data agg data value scan customer value stream small sort a batch', 289, 3, 1),
-      ('https://synth.example.org/doc/89', 'html', 'hash spark stream part table agg order group big scan part hash a filter spark group sort stream value hash sort data spark value value row a', 141, 3, 1),
-      ('https://synth.example.org/doc/9', 'html', 'order small line key filter column order the order part small part window scan agg merge data small sort group a big row batch order spark spark row row line join agg filter agg batch customer line data join row scan scan fast join batch merge group the value scan row value vector line a batch key spark fast customer vector stream join key filter line merge hash join key group big a small', 391, 3, 1),
-      ('https://synth.example.org/doc/90', 'html', 'row data hash agg order the fast window a line big query group window slow hash a batch big column key row agg a', 112, 3, 1),
-      ('https://synth.example.org/doc/91', 'html', 'batch small table spark query query a agg part join hash filter query row column big a slow sort agg join vector filter value sort column big key order agg big column filter window scan filter order window column column scan customer table data slow the batch filter join merge line stream line data value spark order table line sort small query merge slow query big merge vector window small merge merge table stream window a hash', 431, 3, 1),
-      ('https://synth.example.org/doc/92', 'html', 'the spark query slow small table slow value the customer fast stream stream the table merge fast small vector hash order data query join order dup', 146, 3, 1),
-      ('https://synth.example.org/doc/93', 'html', 'vector column column vector a scan key data filter the data group column key row stream part fast merge column line line row key a', 130, 3, 1),
-      ('https://synth.example.org/doc/94', 'html', 'slow slow query scan customer batch big vector order small small customer query window group scan customer query order table a batch group slow', 143, 3, 1),
-      ('https://synth.example.org/doc/95', 'html', 'part part small row merge merge order hash batch row part vector order a row batch data scan order filter small batch window hash table the part column big spark data value vector slow table group data the table filter sort data value query merge group slow query fast a vector query key hash big', 296, 3, 1),
-      ('https://synth.example.org/doc/96', 'html', 'column line sort key window query merge column agg slow part agg slow merge table query key join agg small agg key customer data join hash column query stream window stream customer small customer table merge filter data join table batch query query stream small spark agg column small row fast row merge line table key merge data column fast join fast filter sort data column group customer key the part row group query agg agg a join hash slow customer', 454, 3, 1),
-      ('https://synth.example.org/doc/97', 'html', 'scan key spark line a small agg value row big customer table window value data hash filter query merge hash filter key key a fast window fast order spark merge vector big small small spark join join vector spark scan merge table fast window spark big part value vector the the big vector small query key merge join batch', 320, 3, 1),
-      ('https://synth.example.org/doc/98', 'html', 'spark scan spark table hash batch vector key customer merge hash order table part hash stream sort join order order data stream order batch fast group table filter small row value table part stream table hash the table window a a a table agg line filter scan the batch batch column merge stream line group table a column vector spark filter line hash table agg join group query key column big filter query column window customer slow sort part merge order scan filter spark big window table small group scan vector spark batch', 526, 3, 1),
-      ('https://synth.example.org/doc/99', 'html', 'column key hash value agg sort a spark filter slow batch fast agg big row row join part spark scan value table merge big scan order order data value data slow hash the small stream batch fast data', 196, 3, 1),
-    ],
-  },
-  'q_minhash_lsh_fast': {
-    153156: [
-      (0, 50),
-      (0, 82),
-      (5, 450),
-      (8, 12),
-      (8, 120),
-      (8, 360),
-      (12, 120),
-      (12, 360),
-      (16, 369),
-      (21, 488),
-      (26, 176),
-      (28, 365),
-      (33, 436),
-      (41, 101),
-      (41, 303),
-      (45, 487),
-      (50, 82),
-      (56, 157),
-      (73, 300),
-      (77, 459),
-      (89, 114),
-      (99, 174),
-      (101, 303),
-      (110, 467),
-      (119, 425),
-      (120, 360),
-      (144, 161),
-      (211, 404),
-      (229, 263),
-      (244, 280),
-      (260, 391),
-      (265, 335),
-      (270, 329),
-      (328, 428),
-      (349, 411),
-      (368, 427),
-      (474, 498),
-    ],
-    149174: [
-      (8, 245),
-      (10, 336),
-      (26, 455),
-      (31, 383),
-      (36, 306),
-      (44, 446),
-      (45, 267),
-      (45, 413),
-      (58, 293),
-      (61, 185),
-      (70, 447),
-      (72, 377),
-      (87, 134),
-      (92, 450),
-      (98, 290),
-      (107, 387),
-      (120, 332),
-      (152, 178),
-      (166, 323),
-      (267, 413),
-      (285, 301),
-      (295, 374),
-      (310, 389),
-      (326, 457),
-      (393, 420),
-      (435, 486),
-      (458, 462),
-    ],
-  },
-  'q_simhash_fast': {
-    153156: [
-      (0, 3225590449),
-      (1, 1628741329),
-      (2, 1662167697),
-      (3, 1107672625),
-      (4, 1075166721),
-      (5, 581418165),
-      (6, 1125169809),
-      (7, 1610713216),
-      (8, 35621009),
-      (9, 1082173714),
-      (10, 1116112913),
-      (11, 1091603088),
-      (12, 35621009),
-      (13, 1083346162),
-      (14, 1073847441),
-      (15, 1113643281),
-      (16, 1628547712),
-      (17, 1653651600),
-      (18, 550866085),
-      (19, 1662163633),
-      (20, 1637067413),
-      (21, 1086360754),
-      (22, 1107732624),
-      (23, 563588116),
-      (24, 1100451509),
-      (25, 1116903952),
-      (26, 1645984401),
-      (27, 1636863735),
-      (28, 1124502160),
-      (29, 576039056),
-      (30, 1107729040),
-      (31, 1075284497),
-      (32, 1176411219),
-      (33, 653609456),
-      (34, 1099140752),
-      (35, 1116183728),
-      (36, 440464),
-      (37, 1107855632),
-      (38, 1611827857),
-      (39, 1653845169),
-      (40, 1150553393),
-      (41, 1628617265),
-      (42, 58820752),
-      (43, 1616881809),
-      (44, 1628805760),
-      (45, 34316209),
-      (46, 3246558256),
-      (47, 1100126352),
-      (48, 1073850368),
-      (49, 1090693776),
-      (50, 3225455137),
-      (51, 47304096),
-      (52, 1098948272),
-      (53, 1115688722),
-      (54, 3255209554),
-      (55, 1090558480),
-      (56, 1086434432),
-      (57, 849485553),
-      (58, 1073911313),
-      (59, 3792878225),
-      (60, 1100392464),
-      (61, 107334882),
-      (62, 1637529137),
-      (63, 1083353233),
-      (64, 3302394007),
-      (65, 1087023283),
-      (66, 1624418320),
-      (67, 34717361),
-      (68, 1189448849),
-      (69, 1107422225),
-      (70, 1120004480),
-      (71, 1107467442),
-      (72, 1082625201),
-      (73, 294005266),
-      (74, 1174768659),
-      (75, 582139056),
-      (76, 1650175633),
-      (77, 1108445936),
-      (78, 2809236168),
-      (79, 40929920),
-      (80, 1115921553),
-      (81, 1192667152),
-      (82, 3225590449),
-      (83, 1115856050),
-      (84, 1208590024),
-      (85, 1175889937),
-      (86, 1107730096),
-      (87, 1099730130),
-      (88, 1116859520),
-      (89, 1706085620),
-      (90, 1098948305),
-      (91, 3238038130),
-      (92, 48343176),
-      (93, 1108404240),
-      (94, 1637001744),
-      (95, 1129949824),
-      (96, 1125289680),
-      (97, 1090633297),
-      (98, 1133750400),
-      (99, 26340528),
-      (100, 42174608),
-      (101, 56334993),
-      (102, 1107339792),
-      (103, 3307113011),
-      (104, 1115798544),
-      (105, 1172080818),
-      (106, 1091680785),
-      (107, 1083542707),
-      (108, 1073784976),
-      (109, 1107472048),
-      (110, 1074117120),
-      (111, 1098952624),
-      (112, 1091669632),
-      (113, 1082166320),
-      (114, 565234928),
-      (115, 302144),
-      (116, 3835078801),
-      (117, 3226052755),
-      (118, 1689028753),
-      (119, 1650567312),
-      (120, 35621009),
-      (121, 3239226065),
-      (122, 1180084243),
-      (123, 1670552080),
-      (124, 1083280513),
-      (125, 1096461973),
-      (126, 1662110896),
-      (127, 1108642513),
-      (128, 1098943152),
-      (129, 1099212818),
-      (130, 1141760),
-      (131, 1644210706),
-      (132, 1107331088),
-      (133, 17210000),
-      (134, 1610981040),
-      (135, 1074892421),
-      (136, 1074892465),
-      (137, 1075096784),
-      (138, 1091628562),
-      (139, 1073913584),
-      (140, 1120766353),
-      (141, 18320896),
-      (142, 1650957489),
-      (143, 1074040337),
-      (144, 1099205808),
-      (145, 1115719808),
-      (146, 572231408),
-      (147, 33590528),
-      (148, 1083673616),
-      (149, 1091611216),
-      (150, 1099085840),
-      (151, 1124240016),
-      (152, 1124241040),
-      (153, 1664331280),
-      (154, 1107402384),
-      (155, 1250478322),
-      (156, 1084329138),
-      (157, 1087483008),
-      (158, 1080008368),
-      (159, 1107343424),
-      (160, 26254480),
-      (161, 1082428592),
-      (162, 1099992082),
-      (163, 1907481794),
-      (164, 1704102448),
-      (165, 3235682705),
-      (166, 1098947634),
-      (167, 37854896),
-      (168, 17276592),
-      (169, 3323317347),
-      (170, 1217432608),
-      (171, 1778490016),
-      (172, 1108187776),
-      (173, 1654777856),
-      (174, 26340528),
-      (175, 1115850768),
-      (176, 1645984401),
-      (177, 630428864),
-      (178, 1074889729),
-      (179, 1079156401),
-      (180, 1111530496),
-      (181, 1706229425),
-      (182, 1788988578),
-      (183, 1086360806),
-      (184, 1637255889),
-      (185, 1610855952),
-      (186, 1082165488),
-      (187, 1704110225),
-      (188, 1073852288),
-      (189, 1138405042),
-      (190, 1099140241),
-      (191, 1100319876),
-      (192, 1615308817),
-      (193, 34188192),
-      (194, 1078495392),
-      (195, 1107471888),
-      (196, 3271727122),
-      (197, 1115793424),
-      (198, 3242495014),
-      (199, 1092000977),
-      (200, 3221269008),
-      (201, 1099074226),
-      (202, 1772005520),
-      (203, 1075031569),
-      (204, 1092001425),
-      (205, 1644801712),
-      (206, 3222376129),
-      (207, 1113304081),
-      (208, 1636870800),
-      (209, 1098943696),
-      (210, 1628679701),
-      (211, 1073987216),
-      (212, 1637329040),
-      (213, 1090643968),
-      (214, 1073859648),
-      (215, 1107332736),
-      (216, 1120050325),
-      (217, 598056104),
-      (218, 1100122320),
-      (219, 1091747345),
-      (220, 50633744),
-      (221, 3230578771),
-      (222, 1091284496),
-      (223, 1116125201),
-      (224, 38176785),
-      (225, 1629064872),
-      (226, 1134966992),
-      (227, 1099139216),
-      (228, 1661115024),
-      (229, 42183680),
-      (230, 1100065424),
-      (231, 1167232177),
-      (232, 1091865648),
-      (233, 1636993424),
-      (234, 1115981970),
-      (235, 1637005456),
-      (236, 4697266),
-      (237, 33590432),
-      (238, 1083804833),
-      (239, 1115859089),
-      (240, 1108524592),
-      (241, 1132629152),
-      (242, 1073789456),
-      (243, 59083936),
-      (244, 1637586609),
-      (245, 1098951056),
-      (246, 1124182544),
-      (247, 1648336625),
-      (248, 1100254960),
-      (249, 1653849105),
-      (250, 1107397249),
-      (251, 1074248849),
-      (252, 1107733650),
-      (253, 1074827185),
-      (254, 42044848),
-      (255, 1091673600),
-      (256, 3794333234),
-      (257, 1179683985),
-      (258, 1099009184),
-      (259, 1108511249),
-      (260, 1182959634),
-      (261, 1645456017),
-      (262, 595990704),
-      (263, 42183680),
-      (264, 3259205682),
-      (265, 1090567698),
-      (266, 1708562454),
-      (267, 1100254352),
-      (268, 3246558736),
-      (269, 3251800064),
-      (270, 1636010672),
-      (271, 1091685568),
-      (272, 1628946064),
-      (273, 1098942000),
-      (274, 1090684944),
-      (275, 1628479105),
-      (276, 17926340),
-      (277, 1115799088),
-      (278, 1636953104),
-      (279, 17018512),
-      (280, 47287456),
-      (281, 3772753933),
-      (282, 1091734162),
-      (283, 1737590928),
-      (284, 1619438257),
-      (285, 1107536912),
-      (286, 44416144),
-      (287, 43169808),
-      (288, 1073847936),
-      (289, 1653317248),
-      (290, 1107658880),
-      (291, 1083280512),
-      (292, 1107527697),
-      (293, 1124243600),
-      (294, 1670629376),
-      (295, 1149274257),
-      (296, 1645457041),
-      (297, 25209344),
-      (298, 1620688561),
-      (299, 1092134928),
-      (300, 8495008),
-      (301, 1073785089),
-      (302, 1075156673),
-      (303, 1628937905),
-      (304, 1628743249),
-      (305, 3254815248),
-      (306, 1091673681),
-      (307, 3447947346),
-      (308, 1107536640),
-      (309, 1115851792),
-      (310, 44534960),
-      (311, 1075226641),
-      (312, 1111670289),
-      (313, 1075358608),
-      (314, 1073855040),
-      (315, 1079287425),
-      (316, 1109761664),
-      (317, 1124502192),
-      (318, 1132636176),
-      (319, 3221269008),
-      (320, 1091807761),
-      (321, 1628617232),
-      (322, 1079623313),
-      (323, 1629073040),
-      (324, 1662118416),
-      (325, 3229650534),
-      (326, 1636862160),
-      (327, 1074377360),
-      (328, 1636346384),
-      (329, 1636010672),
-      (330, 1100131890),
-      (331, 1115987056),
-      (332, 1107344912),
-      (333, 38046754),
-      (334, 1099074192),
-      (335, 1611904645),
-      (336, 1073860304),
-      (337, 684754946),
-      (338, 1648483457),
-      (339, 1107921544),
-      (340, 1616439441),
-      (341, 1073777984),
-      (342, 59025424),
-      (343, 1074833424),
-      (344, 1107336754),
-      (345, 1099074704),
-      (346, 1637592753),
-      (347, 1199737104),
-      (348, 587766480),
-      (349, 1100392464),
-      (350, 1654106129),
-      (351, 50498192),
-      (352, 37784130),
-      (353, 730575512),
-      (354, 1107336704),
-      (355, 1109511568),
-      (356, 1108995248),
-      (357, 3221327536),
-      (358, 1082756241),
-      (359, 1628544689),
-      (360, 35621009),
-      (361, 1074178065),
-      (362, 63084720),
-      (363, 1649715857),
-      (364, 1704169104),
-      (365, 1099991728),
-      (366, 1116089232),
-      (367, 1074118289),
-      (368, 588896912),
-      (369, 1628547712),
-      (370, 1099025558),
-      (371, 1116441745),
-      (372, 26446992),
-      (373, 1116977681),
-      (374, 1074183189),
-      (375, 596880564),
-      (376, 1112836241),
-      (377, 1670547920),
-      (378, 1632865476),
-      (379, 767466738),
-      (380, 1133676688),
-      (381, 59088050),
-      (382, 164738060),
-      (383, 1099082256),
-      (384, 35897076),
-      (385, 3221523346),
-      (386, 1100323024),
-      (387, 1091669521),
-      (388, 1091866352),
-      (389, 1318227026),
-      (390, 1083546769),
-      (391, 1182959634),
-      (392, 1078299281),
-      (393, 1073916433),
-      (394, 1107332144),
-      (395, 1107331072),
-      (396, 1178635443),
-      (397, 160073936),
-      (398, 1109043217),
-      (399, 1074915968),
-      (400, 1082256448),
-      (401, 1098951056),
-      (402, 1115732496),
-      (403, 1125751472),
-      (404, 1076084368),
-      (405, 1100651152),
-      (406, 1075023441),
-      (407, 60459152),
-      (408, 1124110002),
-      (409, 1108511248),
-      (410, 1107339920),
-      (411, 1100392464),
-      (412, 1107659136),
-      (413, 3238442672),
-      (414, 1107541680),
-      (415, 1099406512),
-      (416, 1091865234),
-      (417, 3221915666),
-      (418, 1644542592),
-      (419, 25274896),
-      (420, 1658431648),
-      (421, 1662036496),
-      (422, 1111924261),
-      (423, 1737590928),
-      (424, 1082304689),
-      (425, 1644275840),
-      (426, 1100721296),
-      (427, 3959020770),
-      (428, 1636346576),
-      (429, 1116903857),
-      (430, 563185792),
-      (431, 1610918545),
-      (432, 1082239632),
-      (433, 3231623191),
-      (434, 1654689008),
-      (435, 1656858752),
-      (436, 114624656),
-      (437, 1623435396),
-      (438, 17934464),
-      (439, 1669570224),
-      (440, 1074966037),
-      (441, 1636993681),
-      (442, 1107314834),
-      (443, 1636871844),
-      (444, 1082435728),
-      (445, 691253964),
-      (446, 1657923728),
-      (447, 1629063680),
-      (448, 1083157648),
-      (449, 3254823696),
-      (450, 579251380),
-      (451, 578922640),
-      (452, 1116113041),
-      (453, 1073855632),
-      (454, 1648593041),
-      (455, 1091660736),
-      (456, 1737664529),
-      (457, 1091602961),
-      (458, 1082166416),
-      (459, 1125223152),
-      (460, 1074834066),
-      (461, 701532272),
-      (462, 42383504),
-      (463, 1120635024),
-      (464, 1650305169),
-      (465, 1619106320),
-      (466, 3255093698),
-      (467, 1074117248),
-      (468, 1628544689),
-      (469, 1645452817),
-      (470, 1116514320),
-      (471, 3256002576),
-      (472, 1082248194),
-      (473, 1082691488),
-      (474, 1620228752),
-      (475, 10394801),
-      (476, 3260066064),
-      (477, 1095805458),
-      (478, 1645390867),
-      (479, 1082624145),
-      (480, 547690944),
-      (481, 1091612177),
-      (482, 1644538001),
-      (483, 1086434368),
-      (484, 1108516401),
-      (485, 1637320848),
-      (486, 1124306064),
-      (487, 1108320177),
-      (488, 597395600),
-      (489, 33918080),
-      (490, 1074014737),
-      (491, 1343351969),
-      (492, 1116966065),
-      (493, 122858000),
-      (494, 1111596673),
-      (495, 1628479221),
-      (496, 546610352),
-      (497, 3238177298),
-      (498, 1620229776),
-      (499, 1107528705),
-    ],
-    149174: [
-      (0, 8658070),
-      (1, 1074309776),
-      (2, 1086565621),
-      (3, 1636998864),
-      (4, 1124306608),
-      (5, 1653778961),
-      (6, 1249959014),
-      (7, 1086361138),
-      (8, 106224),
-      (9, 1636994737),
-      (10, 1107426944),
-      (11, 1108453573),
-      (12, 1120897456),
-      (13, 1107475985),
-      (14, 1091742289),
-      (15, 1637592757),
-      (16, 1619036288),
-      (17, 1654040593),
-      (18, 1087540369),
-      (19, 1653782544),
-      (20, 1082900017),
-      (21, 1082764960),
-      (22, 1662691984),
-      (23, 1182845200),
-      (24, 26516176),
-      (25, 1107539984),
-      (26, 585865400),
-      (27, 1083280561),
-      (28, 3254954257),
-      (29, 1082304528),
-      (30, 29600912),
-      (31, 1637001744),
-      (32, 1132629040),
-      (33, 1149544977),
-      (34, 1116445329),
-      (35, 1099279538),
-      (36, 1099992081),
-      (37, 1125621488),
-      (38, 1091221041),
-      (39, 1073982097),
-      (40, 1107405328),
-      (41, 1704111761),
-      (42, 1074503297),
-      (43, 1107463346),
-      (44, 114657280),
-      (45, 1086450065),
-      (46, 554872336),
-      (47, 1079102465),
-      (48, 25562128),
-      (49, 1075087569),
-      (50, 1107676305),
-      (51, 1107340032),
-      (52, 1126342354),
-      (53, 2187381136),
-      (54, 1082428049),
-      (55, 13077764),
-      (56, 1107331728),
-      (57, 1654110352),
-      (58, 1662757072),
-      (59, 3314985201),
-      (60, 1653845168),
-      (61, 1639292146),
-      (62, 1074110177),
-      (63, 1115720336),
-      (64, 3940321442),
-      (65, 663136274),
-      (66, 1082174096),
-      (67, 1104383184),
-      (68, 1082436898),
-      (69, 1132898320),
-      (70, 563195536),
-      (71, 1621014545),
-      (72, 1108117906),
-      (73, 1099992752),
-      (74, 1691471085),
-      (75, 1099140784),
-      (76, 1611771537),
-      (77, 3255077760),
-      (78, 1628932225),
-      (79, 1650108560),
-      (80, 2198112322),
-      (81, 1611898608),
-      (82, 1636011697),
-      (83, 3769482144),
-      (84, 46180752),
-      (85, 597924016),
-      (86, 1080012305),
-      (87, 3760171697),
-      (88, 1074174993),
-      (89, 34990464),
-      (90, 58960008),
-      (91, 1628539521),
-      (92, 37792272),
-      (93, 1955964101),
-      (94, 3800677296),
-      (95, 595692256),
-      (96, 1646370483),
-      (97, 1091677712),
-      (98, 1637128848),
-      (99, 60131488),
-      (100, 1115851408),
-      (101, 1099597905),
-      (102, 1611771408),
-      (103, 1612222017),
-      (104, 1628556928),
-      (105, 1107729552),
-      (106, 34572977),
-      (107, 1636018320),
-      (108, 567707796),
-      (109, 1645648529),
-      (110, 1904336102),
-      (111, 1611787968),
-      (112, 1092001297),
-      (113, 1099073552),
-      (114, 1120184336),
-      (115, 563093168),
-      (116, 3794381696),
-      (117, 1121052928),
-      (118, 1107402416),
-      (119, 1201835570),
-      (120, 1082239632),
-      (121, 1107421840),
-      (122, 3247483154),
-      (123, 1174571024),
-      (124, 1727056017),
-      (125, 34179776),
-      (126, 1098951168),
-      (127, 8424502),
-      (128, 1636870160),
-      (129, 1662160017),
-      (130, 3304491155),
-      (131, 1091800272),
-      (132, 562277524),
-      (133, 1146529937),
-      (134, 3760163505),
-      (135, 1124116624),
-      (136, 1637263505),
-      (137, 1143311570),
-      (138, 1658567825),
-      (139, 1628612624),
-      (140, 1108510736),
-      (141, 1107406257),
-      (142, 1636936209),
-      (143, 571652756),
-      (144, 1350683826),
-      (145, 1125157008),
-      (146, 1091620432),
-      (147, 1132824592),
-      (148, 1181075859),
-      (149, 3271593904),
-      (150, 3272117170),
-      (151, 1091734672),
-      (152, 1640143920),
-      (153, 1074968593),
-      (154, 1108707472),
-      (155, 1636941312),
-      (156, 46774704),
-      (157, 1166511665),
-      (158, 1619181073),
-      (159, 1662095008),
-      (160, 3271592448),
-      (161, 1090554384),
-      (162, 1624411312),
-      (163, 1620487217),
-      (164, 3263932800),
-      (165, 1117620673),
-      (166, 1637136400),
-      (167, 1098950674),
-      (168, 3221662224),
-      (169, 1099968016),
-      (170, 3221261233),
-      (171, 59681424),
-      (172, 2307557842),
-      (173, 1637001744),
-      (174, 1186630800),
-      (175, 36683441),
-      (176, 58821008),
-      (177, 1074892289),
-      (178, 1099074608),
-      (179, 1107593872),
-      (180, 1107462672),
-      (181, 3794583218),
-      (182, 60008592),
-      (183, 1637059140),
-      (184, 1628552880),
-      (185, 1639292146),
-      (186, 563579024),
-      (187, 1637068288),
-      (188, 1637591232),
-      (189, 363969),
-      (190, 18193040),
-      (191, 1098956336),
-      (192, 19242726),
-      (193, 1108381360),
-      (194, 1090752144),
-      (195, 1074900209),
-      (196, 1074105361),
-      (197, 1610852496),
-      (198, 1176805105),
-      (199, 60934280),
-      (200, 1074376320),
-      (201, 1629129745),
-      (202, 1112124544),
-      (203, 10815872),
-      (204, 1646173873),
-      (205, 1120045232),
-      (206, 59607258),
-      (207, 1637256368),
-      (208, 600950792),
-      (209, 1116064128),
-      (210, 1073843328),
-      (211, 3221654679),
-      (212, 37991952),
-      (213, 1124317712),
-      (214, 2191650602),
-      (215, 1082370705),
-      (216, 1074310769),
-      (217, 1649522816),
-      (218, 1646898832),
-      (219, 1233689904),
-      (220, 34966704),
-      (221, 1098942482),
-      (222, 597737088),
-      (223, 58899632),
-      (224, 1090555410),
-      (225, 1074236593),
-      (226, 576765620),
-      (227, 1107410608),
-      (228, 1111600129),
-      (229, 17870512),
-      (230, 1636870672),
-      (231, 1629338320),
-      (232, 1099009152),
-      (233, 1653775505),
-      (234, 50563216),
-      (235, 1113106578),
-      (236, 632724721),
-      (237, 1099205680),
-      (238, 1096411264),
-      (239, 8863252),
-      (240, 37994160),
-      (241, 1091611280),
-      (242, 1100122768),
-      (243, 3263473920),
-      (244, 1670500016),
-      (245, 1090625264),
-      (246, 1201703826),
-      (247, 46438576),
-      (248, 1115850898),
-      (249, 26650640),
-      (250, 1133561904),
-      (251, 1091742352),
-      (252, 1636863493),
-      (253, 26250900),
-      (254, 649501872),
-      (255, 1099008400),
-      (256, 1646914432),
-      (257, 1727252529),
-      (258, 1100123312),
-      (259, 1099074128),
-      (260, 603556072),
-      (261, 1090625152),
-      (262, 3261377154),
-      (263, 1662232592),
-      (264, 1100123824),
-      (265, 368325),
-      (266, 1099992115),
-      (267, 1078061201),
-      (268, 656576048),
-      (269, 1120004112),
-      (270, 1100192976),
-      (271, 1075219985),
-      (272, 1107659921),
-      (273, 1612316384),
-      (274, 1091739152),
-      (275, 18331148),
-      (276, 1098951856),
-      (277, 1074915969),
-      (278, 1074105553),
-      (279, 1082501137),
-      (280, 1108379665),
-      (281, 1616232085),
-      (282, 3289548945),
-      (283, 1073987248),
-      (284, 1133684880),
-      (285, 1100056784),
-      (286, 1620159664),
-      (287, 1175624272),
-      (288, 1084929266),
-      (289, 1074508369),
-      (290, 1635818128),
-      (291, 1074175568),
-      (292, 1100254832),
-      (293, 1662757072),
-      (294, 1100061840),
-      (295, 3796666544),
-      (296, 1100130832),
-      (297, 1091996818),
-      (298, 8429216),
-      (299, 1134397616),
-      (300, 1637001776),
-      (301, 1100056784),
-      (302, 1645390513),
-      (303, 1083812993),
-      (304, 1073785489),
-      (305, 3863120951),
-      (306, 1124248080),
-      (307, 1074441906),
-      (308, 3221458241),
-      (309, 1091812881),
-      (310, 1647156928),
-      (311, 1125170704),
-      (312, 1615982272),
-      (313, 2169801092),
-      (314, 1636937394),
-      (315, 1637321360),
-      (316, 1636928688),
-      (317, 1115982080),
-      (318, 1116055552),
-      (319, 1090633233),
-      (320, 1167493649),
-      (321, 1125157392),
-      (322, 1082244224),
-      (323, 1636079632),
-      (324, 1078323377),
-      (325, 8752562),
-      (326, 1636875792),
-      (327, 1648594101),
-      (328, 1670618800),
-      (329, 1115924480),
-      (330, 42306688),
-      (331, 1078176785),
-      (332, 1082239616),
-      (333, 33660033),
-      (334, 1695975441),
-      (335, 582204464),
-      (336, 1636863152),
-      (337, 1628613201),
-      (338, 18197664),
-      (339, 8694962),
-      (340, 1637059248),
-      (341, 41983152),
-      (342, 13692160),
-      (343, 596936868),
-      (344, 1082375856),
-      (345, 3234040870),
-      (346, 1636862624),
-      (347, 1115810192),
-      (348, 1107397040),
-      (349, 1124117136),
-      (350, 1116641680),
-      (351, 1083935888),
-      (352, 50768400),
-      (353, 1100130960),
-      (354, 1115728560),
-      (355, 1079552529),
-      (356, 1083948721),
-      (357, 1108778641),
-      (358, 3239348851),
-      (359, 1636867664),
-      (360, 1108523537),
-      (361, 1082166386),
-      (362, 1664735953),
-      (363, 1098942704),
-      (364, 1636670097),
-      (365, 1099963152),
-      (366, 1628871729),
-      (367, 1099081746),
-      (368, 1091709202),
-      (369, 1107340048),
-      (370, 1100520402),
-      (371, 25599154),
-      (372, 1132694704),
-      (373, 1090882064),
-      (374, 3797715634),
-      (375, 1644661424),
-      (376, 1167231152),
-      (377, 1108122002),
-      (378, 554863120),
-      (379, 1073784850),
-      (380, 1107540625),
-      (381, 1670614705),
-      (382, 1367706802),
-      (383, 1619175952),
-      (384, 50044080),
-      (385, 1098947088),
-      (386, 1199605904),
-      (387, 1636018832),
-      (388, 1118952592),
-      (389, 1613601472),
-      (390, 6405764),
-      (391, 1649778336),
-      (392, 1628028552),
-      (393, 1158842417),
-      (394, 1099144720),
-      (395, 3221789329),
-      (396, 1107529232),
-      (397, 1107402373),
-      (398, 1109768337),
-      (399, 1099144370),
-      (400, 1729538609),
-      (401, 1086499345),
-      (402, 1132898960),
-      (403, 3255208080),
-      (404, 8490150),
-      (405, 1099009680),
-      (406, 1108843153),
-      (407, 1660983424),
-      (408, 3859852177),
-      (409, 1087876228),
-      (410, 42310784),
-      (411, 1100253328),
-      (412, 35948688),
-      (413, 1086450065),
-      (414, 44480656),
-      (415, 41978306),
-      (416, 1671028401),
-      (417, 1100123184),
-      (418, 1695714993),
-      (419, 1073842832),
-      (420, 1158842417),
-      (421, 1637060244),
-      (422, 1628679825),
-      (423, 1628683920),
-      (424, 1090764434),
-      (425, 240273),
-      (426, 1611896977),
-      (427, 1092980416),
-      (428, 1074105536),
-      (429, 1073843856),
-      (430, 1090559154),
-      (431, 50629296),
-      (432, 1107536528),
-      (433, 1101569779),
-      (434, 1115786368),
-      (435, 1107598928),
-      (436, 1090756276),
-      (437, 1636871344),
-      (438, 1107401216),
-      (439, 3784485520),
-      (440, 1662036497),
-      (441, 1662421649),
-      (442, 1632676496),
-      (443, 1146980481),
-      (444, 1079225873),
-      (445, 8694966),
-      (446, 114657296),
-      (447, 563195536),
-      (448, 1718732928),
-      (449, 1090686002),
-      (450, 54569488),
-      (451, 3267397986),
-      (452, 1167232689),
-      (453, 1100187792),
-      (454, 1761774771),
-      (455, 720084152),
-      (456, 1125281010),
-      (457, 1636957712),
-      (458, 1083083921),
-      (459, 59157136),
-      (460, 1132567730),
-      (461, 1670883472),
-      (462, 1083082897),
-      (463, 1132563136),
-      (464, 3255348786),
-      (465, 1272088720),
-      (466, 1100122257),
-      (467, 1739622544),
-      (468, 1087212711),
-      (469, 3791817616),
-      (470, 1100058240),
-      (471, 564631760),
-      (472, 1107467920),
-      (473, 1100655248),
-      (474, 1095871616),
-      (475, 1651633841),
-      (476, 579873280),
-      (477, 1616358405),
-      (478, 1108519441),
-      (479, 1637255696),
-      (480, 572955280),
-      (481, 563309585),
-      (482, 1187039282),
-      (483, 1637526160),
-      (484, 1100450001),
-      (485, 554938000),
-      (486, 1074044496),
-      (487, 1115925682),
-      (488, 1093705296),
-      (489, 1132636178),
-      (490, 1107406464),
-      (491, 1095798322),
-      (492, 1627494081),
-      (493, 1100057746),
-      (494, 25267376),
-      (495, 1100123280),
-      (496, 39172817),
-      (497, 1090557488),
-      (498, 1091685584),
-      (499, 1091811920),
-    ],
-  },
-  'q_neardup_lsh': {
-    153156: [
-      (45, 237, 0.470962),
-      (124, 454, 0.46977),
-    ],
-    149174: [
-      (290, 325, 0.458754),
-      (338, 406, 0.48266),
-      (387, 388, 0.466641),
-    ],
-  },
-  'q_ann_ivf': {
-    153156: [
-      (17, 0.334456),
-      (225, 0.315127),
-      (483, 0.300451),
-      (212, 0.281399),
-      (347, 0.274508),
-      (82, 0.2494),
-      (59, 0.248708),
-      (394, 0.248665),
-      (71, 0.245227),
-      (493, 0.229303),
-    ],
-    149174: [
-      (365, 0.369994),
-      (387, 0.331139),
-      (423, 0.296934),
-      (7, 0.292842),
-      (320, 0.287861),
-      (190, 0.281795),
-      (388, 0.276301),
-      (344, 0.252487),
-      (498, 0.250726),
-      (165, 0.244895),
-    ],
-  },
-  'q_ann_pq': {
-    153156: [
-      (17, 0.334456),
-      (225, 0.315127),
-      (12, 0.311027),
-      (483, 0.300451),
-      (260, 0.298669),
-      (73, 0.297238),
-      (212, 0.281399),
-      (347, 0.274508),
-      (402, 0.2745),
-      (299, 0.268713),
-    ],
-    149174: [
-      (365, 0.369994),
-      (334, 0.362722),
-      (387, 0.331139),
-      (423, 0.296934),
-      (73, 0.295434),
-      (7, 0.292842),
-      (320, 0.287861),
-      (190, 0.281795),
-      (464, 0.276628),
-      (388, 0.276301),
-    ],
-  },
-  'q_semdedup': {
-    153156: [
-      (1, 9, 1, 0.475239, 1),
-      (2, 10, 2, 0.251298, 1),
-      (3, 9, 3, 0.347252, 1),
-      (4, 6, 4, 0.394489, 1),
-      (5, 14, 5, 0.34873, 1),
-      (6, 3, 6, 0.347004, 1),
-      (7, 6, 7, 0.503832, 1),
-      (8, 3, 8, 0.242222, 1),
-      (9, 14, 9, 0.344089, 1),
-      (10, 14, 10, 0.341373, 1),
-      (11, 8, 11, 0.320956, 1),
-      (12, 8, 12, 0.40137, 1),
-      (13, 0, 13, 0.221103, 1),
-      (14, 7, 14, 0.423489, 1),
-      (15, 11, 15, 0.180948, 1),
-      (16, 5, 16, 0.45916, 1),
-      (17, 11, 17, 0.313804, 1),
-      (18, 0, 18, 0.35396, 1),
-      (19, 11, 19, 0.330385, 1),
-      (20, 3, 20, 0.378899, 1),
-      (21, 0, 21, 0.315249, 1),
-      (22, 2, 22, 0.228521, 1),
-      (23, 5, 23, 0.368093, 1),
-      (24, 8, 24, 0.289507, 1),
-      (25, 12, 25, 0.356849, 1),
-      (26, 2, 26, 0.257144, 1),
-      (27, 12, 27, 0.389572, 1),
-      (28, 5, 28, 0.281861, 1),
-      (29, 6, 29, 0.293266, 1),
-      (30, 15, 30, 0.354781, 1),
-      (31, 10, 31, 0.26628, 1),
-      (32, 7, 32, 0.242468, 1),
-      (33, 12, 33, 0.293204, 1),
-      (34, 4, 34, 0.228309, 1),
-      (35, 14, 35, 0.183824, 1),
-      (36, 0, 36, 0.321495, 1),
-      (37, 13, 37, 0.374979, 1),
-      (38, 10, 38, 0.361891, 1),
-      (39, 15, 39, 0.285864, 1),
-      (40, 6, 40, 0.325254, 1),
-      (41, 7, 41, 0.209008, 1),
-      (42, 11, 42, 0.300959, 1),
-      (43, 1, 43, 0.298972, 1),
-      (44, 3, 44, 0.294273, 1),
-      (45, 2, 45, 0.347814, 0),
-      (46, 1, 46, 0.35483, 1),
-      (47, 6, 47, 0.206866, 1),
-      (48, 13, 48, 0.208849, 1),
-      (49, 2, 49, 0.285526, 1),
-      (50, 5, 50, 0.261078, 1),
-      (51, 11, 51, 0.317923, 1),
-      (52, 2, 52, 0.240496, 1),
-      (53, 0, 53, 0.293471, 1),
-      (54, 1, 54, 0.257062, 1),
-      (55, 6, 55, 0.319359, 1),
-      (56, 13, 56, 0.275121, 1),
-      (57, 2, 57, 0.268291, 1),
-      (58, 11, 58, 0.392718, 1),
-      (59, 11, 59, 0.365852, 1),
-      (60, 14, 60, 0.407163, 1),
-      (61, 12, 61, 0.388244, 1),
-      (62, 1, 62, 0.451049, 1),
-      (63, 6, 63, 0.34059, 1),
-      (64, 12, 64, 0.241295, 1),
-      (65, 3, 65, 0.38503, 1),
-      (66, 4, 66, 0.364761, 1),
-      (67, 14, 67, 0.281992, 1),
-      (68, 10, 68, 0.350602, 1),
-      (69, 9, 69, 0.440058, 1),
-      (70, 13, 70, 0.286954, 1),
-      (71, 14, 71, 0.29939, 1),
-      (72, 0, 72, 0.337953, 1),
-      (73, 3, 73, 0.269304, 1),
-      (74, 13, 74, 0.370654, 1),
-      (75, 9, 75, 0.459495, 1),
-      (76, 14, 76, 0.41653, 1),
-      (77, 2, 77, 0.225524, 1),
-      (78, 9, 78, 0.395725, 1),
-      (79, 13, 79, 0.321074, 1),
-      (80, 6, 80, 0.331764, 1),
-      (81, 7, 81, 0.449798, 1),
-      (82, 4, 82, 0.40604, 1),
-      (83, 6, 83, 0.28483, 1),
-      (84, 12, 84, 0.343902, 1),
-      (85, 5, 85, 0.212305, 1),
-      (86, 10, 86, 0.279146, 1),
-      (87, 8, 87, 0.302995, 1),
-      (88, 4, 88, 0.341431, 1),
-      (89, 4, 89, 0.314991, 1),
-      (90, 15, 90, 0.281499, 1),
-      (91, 11, 91, 0.228314, 1),
-      (92, 15, 92, 0.547522, 1),
-      (93, 4, 93, 0.376822, 1),
-      (94, 12, 94, 0.289185, 1),
-      (95, 7, 95, 0.294666, 1),
-      (96, 1, 96, 0.243981, 1),
-      (97, 6, 97, 0.34008, 1),
-      (98, 6, 98, 0.308418, 1),
-      (99, 12, 99, 0.367075, 1),
-      (100, 4, 100, 0.41602, 1),
-      (101, 8, 101, 0.301624, 1),
-      (102, 12, 102, 0.311748, 1),
-      (103, 9, 103, 0.347147, 1),
-      (104, 14, 104, 0.339675, 1),
-      (105, 0, 105, 0.196069, 1),
-      (106, 15, 106, 0.380703, 1),
-      (107, 0, 107, 0.355312, 1),
-      (108, 7, 108, 0.22331, 1),
-      (109, 13, 109, 0.408536, 1),
-      (110, 6, 110, 0.200591, 1),
-      (111, 9, 111, 0.191329, 1),
-      (112, 3, 112, 0.342755, 1),
-      (113, 6, 113, 0.315488, 1),
-      (114, 8, 114, 0.227201, 1),
-      (115, 5, 115, 0.337013, 1),
-      (116, 7, 116, 0.513144, 1),
-      (117, 11, 117, 0.236989, 1),
-      (118, 7, 118, 0.178394, 1),
-      (119, 5, 119, 0.291317, 1),
-      (120, 8, 120, 0.285672, 1),
-      (121, 5, 121, 0.382839, 1),
-      (122, 15, 122, 0.353091, 1),
-      (123, 8, 123, 0.284358, 1),
-      (124, 0, 124, 0.283463, 1),
-      (125, 13, 125, 0.345998, 1),
-      (126, 15, 126, 0.38892, 1),
-      (127, 3, 127, 0.32435, 1),
-      (128, 15, 128, 0.254221, 1),
-      (129, 9, 129, 0.479137, 1),
-      (130, 9, 130, 0.379531, 1),
-      (131, 4, 131, 0.42103, 1),
-      (132, 2, 132, 0.299872, 1),
-      (133, 2, 133, 0.287429, 1),
-      (134, 10, 134, 0.314181, 1),
-      (135, 8, 135, 0.30526, 1),
-      (136, 7, 136, 0.254715, 1),
-      (137, 14, 137, 0.391981, 1),
-      (138, 0, 138, 0.21651, 1),
-      (139, 10, 139, 0.291895, 1),
-      (140, 0, 140, 0.420095, 1),
-      (141, 9, 141, 0.369223, 1),
-      (142, 6, 142, 0.399475, 1),
-      (143, 7, 143, 0.359121, 1),
-      (144, 7, 144, 0.417257, 1),
-      (145, 13, 145, 0.279727, 1),
-      (146, 5, 146, 0.330539, 1),
-      (147, 6, 147, 0.225031, 1),
-      (148, 15, 148, 0.434268, 1),
-      (149, 10, 149, 0.296547, 1),
-      (150, 12, 150, 0.211827, 1),
-      (151, 3, 151, 0.340107, 1),
-      (152, 0, 152, 0.226386, 1),
-      (153, 7, 153, 0.364348, 1),
-      (154, 14, 154, 0.271209, 1),
-      (155, 2, 155, 0.311269, 1),
-      (156, 2, 156, 0.401939, 1),
-      (157, 14, 157, 0.407553, 1),
-      (158, 13, 158, 0.362045, 1),
-      (159, 14, 159, 0.256716, 1),
-      (160, 10, 160, 0.172055, 1),
-      (161, 14, 161, 0.305472, 1),
-      (162, 5, 162, 0.348221, 1),
-      (163, 6, 163, 0.321202, 1),
-      (164, 10, 164, 0.353202, 1),
-      (165, 8, 165, 0.190906, 1),
-      (166, 5, 166, 0.199926, 1),
-      (167, 8, 167, 0.275555, 1),
-      (168, 11, 168, 0.337171, 1),
-      (169, 0, 169, 0.280736, 1),
-      (170, 11, 170, 0.291852, 1),
-      (171, 4, 171, 0.345969, 1),
-      (172, 5, 172, 0.416159, 1),
-      (173, 5, 173, 0.32225, 1),
-      (174, 15, 174, 0.423764, 1),
-      (175, 6, 175, 0.312671, 1),
-      (176, 2, 176, 0.210345, 1),
-      (177, 5, 177, 0.264047, 1),
-      (178, 14, 178, 0.34989, 1),
-      (179, 3, 179, 0.354236, 1),
-      (180, 9, 180, 0.330397, 1),
-      (181, 8, 181, 0.257865, 1),
-      (182, 13, 182, 0.32988, 1),
-      (183, 2, 183, 0.401117, 1),
-      (184, 7, 184, 0.370893, 1),
-      (185, 13, 185, 0.318445, 1),
-      (186, 13, 186, 0.373504, 1),
-      (187, 5, 187, 0.344661, 1),
-      (188, 12, 188, 0.408494, 1),
-      (189, 12, 189, 0.41997, 1),
-      (190, 4, 190, 0.32759, 1),
-      (191, 5, 191, 0.270953, 1),
-      (192, 13, 192, 0.401367, 1),
-      (193, 13, 193, 0.273017, 1),
-      (194, 4, 194, 0.256153, 1),
-      (195, 10, 195, 0.319968, 1),
-      (196, 10, 196, 0.252547, 1),
-      (197, 14, 197, 0.310248, 1),
-      (198, 1, 198, 0.311679, 1),
-      (199, 8, 199, 0.342137, 1),
-      (200, 11, 200, 0.343617, 1),
-      (201, 3, 201, 0.30663, 1),
-      (202, 4, 202, 0.43161, 1),
-      (203, 13, 203, 0.290199, 1),
-      (204, 5, 204, 0.378392, 1),
-      (205, 0, 205, 0.346058, 1),
-      (206, 2, 206, 0.440532, 1),
-      (207, 5, 207, 0.314189, 1),
-      (208, 10, 208, 0.207787, 1),
-      (209, 6, 209, 0.400781, 1),
-      (210, 13, 210, 0.132211, 1),
-      (211, 7, 211, 0.410113, 1),
-      (212, 11, 212, 0.190886, 1),
-      (213, 14, 213, 0.223783, 1),
-      (214, 10, 214, 0.434493, 1),
-      (215, 0, 215, 0.275543, 1),
-      (216, 12, 216, 0.419296, 1),
-      (217, 6, 217, 0.303699, 1),
-      (218, 2, 218, 0.268149, 1),
-      (219, 2, 219, 0.355691, 1),
-      (220, 6, 220, 0.271516, 1),
-      (221, 0, 221, 0.374665, 1),
-      (222, 8, 222, 0.240295, 1),
-      (223, 15, 223, 0.418674, 1),
-      (224, 8, 224, 0.476005, 1),
-      (225, 11, 225, 0.251489, 1),
-      (226, 14, 226, 0.242765, 1),
-      (227, 6, 227, 0.242143, 1),
-      (228, 12, 228, 0.330379, 1),
-      (229, 3, 229, 0.379355, 1),
-      (230, 4, 230, 0.330576, 1),
-      (231, 6, 231, 0.362508, 1),
-      (232, 1, 232, 0.394082, 1),
-      (233, 14, 233, 0.346182, 1),
-      (234, 14, 234, 0.443763, 1),
-      (235, 2, 235, 0.330102, 1),
-      (236, 14, 236, 0.332274, 1),
-      (237, 2, 45, 0.345841, 1),
-      (238, 6, 238, 0.39236, 1),
-      (239, 11, 239, 0.314399, 1),
-      (240, 8, 240, 0.253464, 1),
-      (241, 11, 241, 0.321558, 1),
-      (242, 10, 242, 0.409136, 1),
-      (243, 12, 243, 0.314036, 1),
-      (244, 2, 244, 0.379012, 1),
-      (245, 11, 245, 0.349126, 1),
-      (246, 13, 246, 0.204077, 1),
-      (247, 8, 247, 0.374519, 1),
-      (248, 9, 248, 0.26565, 1),
-      (249, 6, 249, 0.309359, 1),
-      (250, 9, 250, 0.555813, 1),
-      (251, 6, 251, 0.455346, 1),
-      (252, 1, 252, 0.492426, 1),
-      (253, 5, 253, 0.375014, 1),
-      (254, 13, 254, 0.298615, 1),
-      (255, 0, 255, 0.375293, 1),
-      (256, 8, 256, 0.29372, 1),
-      (257, 13, 257, 0.388809, 1),
-      (258, 7, 258, 0.268313, 1),
-      (259, 11, 259, 0.438, 1),
-      (260, 9, 260, 0.473982, 1),
-      (261, 14, 261, 0.318949, 1),
-      (262, 3, 262, 0.445154, 1),
-      (263, 10, 263, 0.246023, 1),
-      (264, 11, 264, 0.345003, 1),
-      (265, 9, 265, 0.395436, 1),
-      (266, 0, 266, 0.465438, 1),
-      (267, 8, 267, 0.317567, 1),
-      (268, 5, 268, 0.347909, 1),
-      (269, 0, 269, 0.363344, 1),
-      (270, 5, 270, 0.335189, 1),
-      (271, 1, 271, 0.258609, 1),
-      (272, 11, 272, 0.45747, 1),
-      (273, 9, 273, 0.458819, 1),
-      (274, 0, 274, 0.349044, 1),
-      (275, 2, 275, 0.283705, 1),
-      (276, 7, 276, 0.300522, 1),
-      (277, 8, 277, 0.183626, 1),
-      (278, 15, 278, 0.449928, 1),
-      (279, 8, 279, 0.258362, 1),
-      (280, 14, 280, 0.233876, 1),
-      (281, 4, 281, 0.290487, 1),
-      (282, 14, 282, 0.362183, 1),
-      (283, 1, 283, 0.30477, 1),
-      (284, 11, 284, 0.316748, 1),
-      (285, 12, 285, 0.399007, 1),
-      (286, 13, 286, 0.358189, 1),
-      (287, 10, 287, 0.351231, 1),
-      (288, 14, 288, 0.319238, 1),
-      (289, 7, 289, 0.367825, 1),
-      (290, 10, 290, 0.32897, 1),
-      (291, 0, 291, 0.269204, 1),
-      (292, 3, 292, 0.273915, 1),
-      (293, 9, 293, 0.28536, 1),
-      (294, 8, 294, 0.286994, 1),
-      (295, 10, 295, 0.44467, 1),
-      (296, 14, 296, 0.304964, 1),
-      (297, 2, 297, 0.254373, 1),
-      (298, 10, 298, 0.413838, 1),
-      (299, 0, 299, 0.308629, 1),
-      (300, 8, 300, 0.243769, 1),
-      (301, 13, 301, 0.298236, 1),
-      (302, 10, 302, 0.258188, 1),
-      (303, 15, 303, 0.183974, 1),
-      (304, 15, 304, 0.376041, 1),
-      (305, 6, 305, 0.27017, 1),
-      (306, 11, 306, 0.25515, 1),
-      (307, 3, 307, 0.303135, 1),
-      (308, 13, 308, 0.390105, 1),
-      (309, 5, 309, 0.384704, 1),
-      (310, 5, 310, 0.276168, 1),
-      (311, 0, 311, 0.276889, 1),
-      (312, 13, 312, 0.350256, 1),
-      (313, 12, 313, 0.344437, 1),
-      (314, 15, 314, 0.352996, 1),
-      (315, 8, 315, 0.294791, 1),
-      (316, 8, 316, 0.397556, 1),
-      (317, 13, 317, 0.436655, 1),
-      (318, 15, 318, 0.322077, 1),
-      (319, 1, 319, 0.385802, 1),
-      (320, 11, 320, 0.427238, 1),
-      (321, 15, 321, 0.32511, 1),
-      (322, 2, 322, 0.367356, 1),
-      (323, 0, 323, 0.293533, 1),
-      (324, 11, 324, 0.359559, 1),
-      (325, 6, 325, 0.479176, 1),
-      (326, 6, 326, 0.441514, 1),
-      (327, 14, 327, 0.322204, 1),
-      (328, 11, 328, 0.34081, 1),
-      (329, 3, 329, 0.35533, 1),
-      (330, 11, 330, 0.484095, 1),
-      (331, 0, 331, 0.200414, 1),
-      (332, 13, 332, 0.346378, 1),
-      (333, 10, 333, 0.349772, 1),
-      (334, 9, 334, 0.280282, 1),
-      (335, 1, 335, 0.444124, 1),
-      (336, 0, 336, 0.366713, 1),
-      (337, 5, 337, 0.498201, 1),
-      (338, 10, 338, 0.263123, 1),
-      (339, 6, 339, 0.291602, 1),
-      (340, 7, 340, 0.351342, 1),
-      (341, 6, 341, 0.236591, 1),
-      (342, 3, 342, 0.336127, 1),
-      (343, 8, 343, 0.368642, 1),
-      (344, 3, 344, 0.326314, 1),
-      (345, 8, 345, 0.323733, 1),
-      (346, 14, 346, 0.245562, 1),
-      (347, 4, 347, 0.342262, 1),
-      (348, 1, 348, 0.281658, 1),
-      (349, 3, 349, 0.427121, 1),
-      (350, 15, 350, 0.429069, 1),
-      (351, 7, 351, 0.291067, 1),
-      (352, 9, 352, 0.197269, 1),
-      (353, 7, 353, 0.282569, 1),
-      (354, 6, 354, 0.208553, 1),
-      (355, 8, 355, 0.381161, 1),
-      (356, 14, 356, 0.295544, 1),
-      (357, 6, 357, 0.35476, 1),
-      (358, 4, 171, 0.397182, 0),
-      (359, 5, 359, 0.252695, 1),
-      (360, 15, 360, 0.33185, 1),
-      (361, 14, 361, 0.231309, 1),
-      (362, 1, 362, 0.385651, 1),
-      (363, 8, 363, 0.304732, 1),
-      (364, 0, 364, 0.430214, 1),
-      (365, 10, 365, 0.389003, 1),
-      (366, 2, 366, 0.301179, 1),
-      (367, 7, 367, 0.228749, 1),
-      (368, 4, 368, 0.44009, 1),
-      (369, 4, 369, 0.396197, 1),
-      (370, 10, 370, 0.496165, 1),
-      (371, 4, 371, 0.370694, 1),
-      (372, 3, 372, 0.384388, 1),
-      (373, 7, 373, 0.341335, 1),
-      (374, 5, 374, 0.316237, 1),
-      (375, 12, 375, 0.388632, 1),
-      (376, 9, 376, 0.453277, 1),
-      (377, 9, 377, 0.437455, 1),
-      (378, 14, 378, 0.275643, 1),
-      (379, 9, 379, 0.374385, 1),
-      (380, 12, 380, 0.42492, 1),
-      (381, 8, 381, 0.29767, 1),
-      (382, 0, 382, 0.359122, 1),
-      (383, 6, 383, 0.337761, 1),
-      (384, 7, 384, 0.347975, 1),
-      (385, 11, 385, 0.34481, 1),
-      (386, 1, 386, 0.377813, 1),
-      (387, 14, 387, 0.294609, 1),
-      (388, 1, 388, 0.280852, 1),
-      (389, 4, 389, 0.297521, 1),
-      (390, 7, 390, 0.434754, 0),
-      (391, 6, 391, 0.331793, 1),
-      (392, 12, 392, 0.33807, 1),
-      (393, 7, 393, 0.289838, 1),
-      (394, 11, 394, 0.260729, 1),
-      (395, 0, 395, 0.497652, 1),
-      (396, 0, 396, 0.392234, 1),
-      (397, 14, 397, 0.405221, 1),
-      (398, 12, 398, 0.360253, 1),
-      (399, 1, 399, 0.337963, 1),
-      (400, 5, 400, 0.297995, 1),
-      (401, 8, 401, 0.423228, 1),
-      (402, 1, 402, 0.347338, 1),
-      (403, 5, 403, 0.180549, 1),
-      (404, 10, 404, 0.473977, 1),
-      (405, 13, 405, 0.326921, 1),
-      (406, 0, 406, 0.320545, 1),
-      (407, 6, 407, 0.345145, 1),
-      (408, 11, 408, 0.406592, 1),
-      (409, 7, 409, 0.203981, 1),
-      (410, 2, 410, 0.42504, 1),
-      (411, 8, 411, 0.175013, 1),
-      (412, 9, 412, 0.280851, 1),
-      (413, 2, 413, 0.326299, 1),
-      (414, 14, 414, 0.269726, 1),
-      (415, 4, 415, 0.326895, 1),
-      (416, 6, 416, 0.34275, 1),
-      (417, 5, 417, 0.360023, 1),
-      (418, 12, 418, 0.239395, 1),
-      (419, 3, 419, 0.227892, 1),
-      (420, 2, 420, 0.35717, 1),
-      (421, 11, 421, 0.29542, 1),
-      (422, 11, 422, 0.361309, 1),
-      (423, 9, 423, 0.304018, 1),
-      (424, 3, 424, 0.380336, 1),
-      (425, 2, 425, 0.292315, 1),
-      (426, 0, 426, 0.35095, 1),
-      (427, 3, 427, 0.389183, 1),
-      (428, 7, 428, 0.315327, 1),
-      (429, 2, 429, 0.288046, 1),
-      (430, 15, 430, 0.308892, 1),
-      (431, 6, 431, 0.277676, 1),
-      (432, 15, 432, 0.308953, 1),
-      (433, 10, 433, 0.390905, 1),
-      (434, 1, 434, 0.325054, 1),
-      (435, 10, 435, 0.348696, 1),
-      (436, 3, 436, 0.236273, 1),
-      (437, 14, 437, 0.378792, 1),
-      (438, 3, 438, 0.303571, 1),
-      (439, 3, 439, 0.438806, 1),
-      (440, 13, 440, 0.288097, 1),
-      (441, 14, 441, 0.300458, 1),
-      (442, 10, 442, 0.350248, 1),
-      (443, 8, 443, 0.294911, 1),
-      (444, 8, 444, 0.338682, 1),
-      (445, 2, 445, 0.351505, 1),
-      (446, 7, 446, 0.257515, 1),
-      (447, 5, 447, 0.179525, 1),
-      (448, 15, 448, 0.158595, 1),
-      (449, 15, 449, 0.220966, 1),
-      (450, 11, 450, 0.325896, 1),
-      (451, 5, 451, 0.3408, 1),
-      (452, 6, 452, 0.23576, 1),
-      (453, 8, 453, 0.291941, 1),
-      (454, 2, 454, 0.423649, 1),
-      (455, 6, 455, 0.330646, 1),
-      (456, 2, 456, 0.378412, 1),
-      (457, 4, 457, 0.382461, 1),
-      (458, 5, 458, 0.431422, 1),
-      (459, 1, 459, 0.372961, 1),
-      (460, 14, 460, 0.25593, 1),
-      (461, 12, 461, 0.28322, 1),
-      (462, 1, 462, 0.3478, 1),
-      (463, 14, 463, 0.268989, 1),
-      (464, 3, 464, 0.334277, 1),
-      (465, 10, 465, 0.266007, 1),
-      (466, 3, 466, 0.257713, 1),
-      (467, 12, 467, 0.299439, 1),
-      (468, 12, 468, 0.425357, 1),
-      (469, 10, 469, 0.219823, 1),
-      (470, 5, 470, 0.411202, 1),
-      (471, 6, 471, 0.25354, 1),
-      (472, 2, 472, 0.346416, 1),
-      (473, 8, 473, 0.306628, 1),
-      (474, 8, 474, 0.277406, 1),
-      (475, 6, 475, 0.280229, 1),
-      (476, 11, 476, 0.340494, 1),
-      (477, 9, 477, 0.354283, 1),
-      (478, 4, 478, 0.384851, 1),
-      (479, 1, 479, 0.228488, 1),
-      (480, 3, 480, 0.345366, 1),
-      (481, 12, 481, 0.174044, 1),
-      (482, 12, 482, 0.304656, 1),
-      (483, 7, 390, 0.386428, 1),
-      (484, 4, 484, 0.272736, 1),
-      (485, 15, 485, 0.256976, 1),
-      (486, 7, 486, 0.381147, 1),
-      (487, 11, 487, 0.373828, 1),
-      (488, 2, 488, 0.326489, 1),
-      (489, 4, 489, 0.249598, 1),
-      (490, 9, 490, 0.321393, 1),
-      (491, 5, 491, 0.338181, 1),
-      (492, 2, 492, 0.298062, 1),
-      (493, 14, 493, 0.359344, 1),
-      (494, 1, 494, 0.44596, 1),
-      (495, 12, 495, 0.362629, 1),
-      (496, 5, 496, 0.145621, 1),
-      (497, 3, 497, 0.428664, 1),
-      (498, 14, 498, 0.243983, 1),
-      (499, 9, 499, 0.329019, 1),
-    ],
-    149174: [
-      (1, 12, 1, 0.47039, 1),
-      (2, 11, 2, 0.305736, 1),
-      (3, 8, 3, 0.39317, 1),
-      (4, 15, 4, 0.357754, 1),
-      (5, 13, 5, 0.232622, 1),
-      (6, 1, 6, 0.3127, 1),
-      (7, 5, 7, 0.308838, 1),
-      (8, 0, 8, 0.413666, 1),
-      (9, 13, 9, 0.343522, 1),
-      (10, 13, 10, 0.258855, 1),
-      (11, 11, 11, 0.338489, 1),
-      (12, 6, 12, 0.425536, 1),
-      (13, 11, 13, 0.276616, 1),
-      (14, 0, 14, 0.313831, 1),
-      (15, 10, 15, 0.40412, 1),
-      (16, 12, 16, 0.383758, 1),
-      (17, 2, 17, 0.240556, 1),
-      (18, 11, 18, 0.290447, 1),
-      (19, 15, 19, 0.460405, 1),
-      (20, 10, 20, 0.320571, 1),
-      (21, 9, 21, 0.405839, 1),
-      (22, 14, 22, 0.267127, 1),
-      (23, 14, 23, 0.439493, 1),
-      (24, 13, 24, 0.382619, 1),
-      (25, 6, 25, 0.415751, 1),
-      (26, 4, 26, 0.371158, 1),
-      (27, 12, 27, 0.298265, 1),
-      (28, 15, 28, 0.239311, 1),
-      (29, 5, 29, 0.300044, 1),
-      (30, 6, 30, 0.207119, 1),
-      (31, 5, 31, 0.236746, 1),
-      (32, 14, 32, 0.525668, 1),
-      (33, 9, 33, 0.271438, 1),
-      (34, 7, 34, 0.295187, 1),
-      (35, 8, 35, 0.406821, 1),
-      (36, 14, 36, 0.361019, 1),
-      (37, 0, 37, 0.357397, 1),
-      (38, 7, 38, 0.387524, 1),
-      (39, 3, 39, 0.36379, 1),
-      (40, 1, 40, 0.233081, 1),
-      (41, 6, 41, 0.361124, 1),
-      (42, 11, 42, 0.279615, 1),
-      (43, 9, 43, 0.347019, 1),
-      (44, 9, 44, 0.33214, 1),
-      (45, 14, 45, 0.201666, 1),
-      (46, 10, 46, 0.363324, 1),
-      (47, 4, 47, 0.221644, 1),
-      (48, 2, 48, 0.368029, 1),
-      (49, 13, 49, 0.241845, 1),
-      (50, 11, 50, 0.306822, 1),
-      (51, 8, 51, 0.502063, 1),
-      (52, 10, 52, 0.244661, 1),
-      (53, 1, 53, 0.365143, 0),
-      (54, 15, 54, 0.382991, 1),
-      (55, 0, 55, 0.419952, 1),
-      (56, 14, 56, 0.209369, 1),
-      (57, 12, 57, 0.249939, 1),
-      (58, 4, 58, 0.330428, 1),
-      (59, 10, 59, 0.319823, 1),
-      (60, 2, 60, 0.340885, 1),
-      (61, 1, 61, 0.302379, 1),
-      (62, 9, 62, 0.445032, 1),
-      (63, 8, 63, 0.21218, 1),
-      (64, 12, 64, 0.39891, 1),
-      (65, 10, 65, 0.2999, 1),
-      (66, 0, 66, 0.287715, 1),
-      (67, 3, 67, 0.332246, 1),
-      (68, 2, 68, 0.448534, 1),
-      (69, 13, 69, 0.435625, 1),
-      (70, 10, 70, 0.421942, 1),
-      (71, 6, 71, 0.255557, 1),
-      (72, 10, 72, 0.302078, 1),
-      (73, 13, 73, 0.312837, 1),
-      (74, 3, 74, 0.4238, 1),
-      (75, 3, 75, 0.308301, 1),
-      (76, 14, 76, 0.258451, 1),
-      (77, 10, 77, 0.395746, 1),
-      (78, 6, 78, 0.343318, 1),
-      (79, 6, 79, 0.456348, 1),
-      (80, 6, 80, 0.280371, 1),
-      (81, 5, 81, 0.296821, 1),
-      (82, 11, 82, 0.319063, 1),
-      (83, 11, 83, 0.278093, 1),
-      (84, 7, 84, 0.379389, 1),
-      (85, 4, 85, 0.297422, 1),
-      (86, 4, 86, 0.241195, 1),
-      (87, 15, 87, 0.285183, 1),
-      (88, 1, 88, 0.426808, 1),
-      (89, 13, 89, 0.357477, 1),
-      (90, 5, 90, 0.422939, 1),
-      (91, 11, 91, 0.306812, 1),
-      (92, 12, 92, 0.322774, 1),
-      (93, 11, 93, 0.333532, 1),
-      (94, 3, 94, 0.240223, 1),
-      (95, 14, 95, 0.405787, 1),
-      (96, 8, 96, 0.320829, 1),
-      (97, 2, 97, 0.433633, 1),
-      (98, 8, 98, 0.357515, 1),
-      (99, 4, 99, 0.291806, 1),
-      (100, 13, 100, 0.295159, 1),
-      (101, 1, 101, 0.352218, 1),
-      (102, 0, 102, 0.434961, 1),
-      (103, 7, 103, 0.316448, 1),
-      (104, 10, 104, 0.299065, 1),
-      (105, 6, 105, 0.371387, 1),
-      (106, 1, 106, 0.266686, 1),
-      (107, 4, 107, 0.274143, 1),
-      (108, 7, 108, 0.554073, 1),
-      (109, 7, 109, 0.32179, 1),
-      (110, 8, 110, 0.274026, 1),
-      (111, 9, 111, 0.417442, 1),
-      (112, 10, 112, 0.193492, 1),
-      (113, 6, 113, 0.279533, 1),
-      (114, 15, 114, 0.316443, 1),
-      (115, 1, 115, 0.223463, 1),
-      (116, 15, 116, 0.422152, 1),
-      (117, 5, 117, 0.412794, 1),
-      (118, 11, 118, 0.322339, 1),
-      (119, 1, 119, 0.453201, 1),
-      (120, 1, 120, 0.242838, 1),
-      (121, 4, 121, 0.444213, 1),
-      (122, 2, 122, 0.295837, 1),
-      (123, 11, 123, 0.313824, 1),
-      (124, 12, 124, 0.32941, 1),
-      (125, 1, 125, 0.279207, 1),
-      (126, 4, 126, 0.319322, 1),
-      (127, 11, 127, 0.380087, 1),
-      (128, 10, 128, 0.337107, 1),
-      (129, 11, 129, 0.250712, 1),
-      (130, 4, 130, 0.299416, 1),
-      (131, 8, 131, 0.366329, 1),
-      (132, 8, 132, 0.287232, 1),
-      (133, 13, 133, 0.479934, 1),
-      (134, 10, 134, 0.371349, 1),
-      (135, 14, 135, 0.330017, 1),
-      (136, 15, 136, 0.294425, 1),
-      (137, 5, 137, 0.359059, 1),
-      (138, 12, 138, 0.297101, 1),
-      (139, 6, 139, 0.267981, 1),
-      (140, 9, 140, 0.328131, 1),
-      (141, 14, 141, 0.375404, 1),
-      (142, 2, 142, 0.248032, 1),
-      (143, 14, 143, 0.424203, 1),
-      (144, 6, 144, 0.319142, 1),
-      (145, 11, 145, 0.292838, 1),
-      (146, 3, 146, 0.332654, 1),
-      (147, 7, 147, 0.258386, 1),
-      (148, 12, 148, 0.331894, 1),
-      (149, 3, 149, 0.308737, 1),
-      (150, 2, 150, 0.379423, 1),
-      (151, 3, 151, 0.384233, 1),
-      (152, 2, 152, 0.246073, 1),
-      (153, 9, 153, 0.304589, 1),
-      (154, 2, 154, 0.383684, 1),
-      (155, 4, 155, 0.398423, 1),
-      (156, 13, 156, 0.317882, 1),
-      (157, 6, 157, 0.365867, 1),
-      (158, 8, 158, 0.292516, 1),
-      (159, 1, 159, 0.431642, 1),
-      (160, 2, 160, 0.446434, 1),
-      (161, 12, 161, 0.42614, 1),
-      (162, 6, 162, 0.363469, 1),
-      (163, 1, 163, 0.304242, 1),
-      (164, 15, 164, 0.419629, 1),
-      (165, 12, 165, 0.30516, 1),
-      (166, 0, 166, 0.464445, 1),
-      (167, 0, 167, 0.450284, 1),
-      (168, 4, 168, 0.382399, 1),
-      (169, 15, 169, 0.49543, 0),
-      (170, 7, 170, 0.152978, 1),
-      (171, 0, 171, 0.299946, 1),
-      (172, 11, 172, 0.465273, 1),
-      (173, 2, 173, 0.292726, 1),
-      (174, 6, 174, 0.327764, 1),
-      (175, 2, 175, 0.373282, 1),
-      (176, 14, 176, 0.448381, 1),
-      (177, 11, 177, 0.456402, 1),
-      (178, 3, 178, 0.469354, 1),
-      (179, 9, 179, 0.366953, 1),
-      (180, 4, 180, 0.264846, 1),
-      (181, 2, 181, 0.267868, 1),
-      (182, 4, 182, 0.289422, 1),
-      (183, 11, 183, 0.336271, 1),
-      (184, 7, 184, 0.204902, 1),
-      (185, 10, 185, 0.254055, 1),
-      (186, 0, 186, 0.277954, 1),
-      (187, 10, 187, 0.476551, 1),
-      (188, 15, 188, 0.214553, 1),
-      (189, 6, 189, 0.199495, 1),
-      (190, 7, 190, 0.549962, 1),
-      (191, 13, 191, 0.308225, 1),
-      (192, 5, 192, 0.258806, 1),
-      (193, 10, 193, 0.387219, 1),
-      (194, 15, 194, 0.313377, 1),
-      (195, 15, 195, 0.401121, 1),
-      (196, 1, 196, 0.420549, 1),
-      (197, 2, 197, 0.341261, 1),
-      (198, 13, 198, 0.438951, 1),
-      (199, 14, 199, 0.240817, 1),
-      (200, 14, 200, 0.429709, 1),
-      (201, 2, 201, 0.231502, 1),
-      (202, 2, 202, 0.288883, 1),
-      (203, 8, 203, 0.470429, 1),
-      (204, 11, 204, 0.257204, 1),
-      (205, 12, 205, 0.18205, 1),
-      (206, 3, 206, 0.320993, 1),
-      (207, 10, 207, 0.376595, 1),
-      (208, 0, 208, 0.232934, 1),
-      (209, 5, 209, 0.383983, 1),
-      (210, 10, 210, 0.393714, 1),
-      (211, 12, 211, 0.362192, 1),
-      (212, 10, 212, 0.35252, 1),
-      (213, 1, 213, 0.260774, 1),
-      (214, 5, 214, 0.351216, 1),
-      (215, 3, 215, 0.425337, 1),
-      (216, 4, 216, 0.365787, 1),
-      (217, 6, 217, 0.306787, 1),
-      (218, 1, 218, 0.32053, 1),
-      (219, 1, 219, 0.332941, 1),
-      (220, 9, 220, 0.315001, 1),
-      (221, 6, 221, 0.336117, 1),
-      (222, 12, 222, 0.321414, 1),
-      (223, 12, 223, 0.301223, 1),
-      (224, 3, 224, 0.45015, 1),
-      (225, 6, 225, 0.330858, 1),
-      (226, 1, 226, 0.200111, 1),
-      (227, 1, 227, 0.341275, 1),
-      (228, 2, 228, 0.317654, 1),
-      (229, 14, 229, 0.336686, 1),
-      (230, 6, 230, 0.277562, 1),
-      (231, 13, 231, 0.281682, 1),
-      (232, 7, 232, 0.303398, 1),
-      (233, 2, 233, 0.33831, 1),
-      (234, 7, 234, 0.343934, 1),
-      (235, 14, 235, 0.380587, 1),
-      (236, 8, 236, 0.408223, 1),
-      (237, 15, 237, 0.269482, 1),
-      (238, 1, 238, 0.31249, 1),
-      (239, 9, 239, 0.345969, 1),
-      (240, 2, 240, 0.387799, 1),
-      (241, 8, 241, 0.318005, 1),
-      (242, 0, 242, 0.319925, 1),
-      (243, 12, 243, 0.278951, 1),
-      (244, 14, 244, 0.250717, 1),
-      (245, 2, 245, 0.426196, 1),
-      (246, 13, 246, 0.354935, 1),
-      (247, 5, 247, 0.382011, 1),
-      (248, 13, 248, 0.190783, 1),
-      (249, 5, 249, 0.188325, 1),
-      (250, 3, 250, 0.39052, 1),
-      (251, 3, 251, 0.43953, 1),
-      (252, 1, 252, 0.398497, 1),
-      (253, 0, 253, 0.394551, 1),
-      (254, 6, 254, 0.234846, 1),
-      (255, 6, 255, 0.318588, 1),
-      (256, 13, 256, 0.525183, 1),
-      (257, 15, 257, 0.382784, 1),
-      (258, 14, 258, 0.251126, 1),
-      (259, 11, 259, 0.217008, 1),
-      (260, 7, 260, 0.394688, 1),
-      (261, 2, 261, 0.32627, 1),
-      (262, 4, 262, 0.254846, 1),
-      (263, 4, 263, 0.263148, 1),
-      (264, 5, 264, 0.297174, 1),
-      (265, 6, 265, 0.34601, 1),
-      (266, 8, 266, 0.27818, 1),
-      (267, 6, 267, 0.315527, 1),
-      (268, 12, 268, 0.357754, 1),
-      (269, 15, 269, 0.368213, 1),
-      (270, 13, 270, 0.368359, 1),
-      (271, 14, 271, 0.317178, 1),
-      (272, 14, 272, 0.403997, 1),
-      (273, 13, 273, 0.33166, 1),
-      (274, 11, 274, 0.391324, 1),
-      (275, 7, 275, 0.401246, 1),
-      (276, 6, 276, 0.354124, 1),
-      (277, 5, 277, 0.237047, 1),
-      (278, 13, 278, 0.34222, 1),
-      (279, 11, 279, 0.276083, 1),
-      (280, 4, 280, 0.355048, 1),
-      (281, 9, 281, 0.407537, 1),
-      (282, 12, 282, 0.364665, 1),
-      (283, 5, 283, 0.393973, 1),
-      (284, 10, 284, 0.203129, 1),
-      (285, 10, 285, 0.224518, 1),
-      (286, 10, 286, 0.278222, 1),
-      (287, 15, 287, 0.236592, 1),
-      (288, 8, 288, 0.357907, 1),
-      (289, 0, 289, 0.285323, 1),
-      (290, 14, 290, 0.29082, 1),
-      (291, 9, 291, 0.378541, 1),
-      (292, 9, 292, 0.171397, 1),
-      (293, 4, 293, 0.296598, 1),
-      (294, 15, 294, 0.30163, 1),
-      (295, 9, 295, 0.232661, 1),
-      (296, 1, 296, 0.271954, 1),
-      (297, 6, 297, 0.268879, 1),
-      (298, 13, 298, 0.281343, 1),
-      (299, 9, 299, 0.212646, 1),
-      (300, 1, 53, 0.228769, 1),
-      (301, 13, 301, 0.285546, 1),
-      (302, 10, 302, 0.368965, 1),
-      (303, 6, 303, 0.372799, 1),
-      (304, 1, 304, 0.360362, 1),
-      (305, 15, 28, 0.347724, 0),
-      (306, 0, 306, 0.309803, 1),
-      (307, 4, 307, 0.211285, 1),
-      (308, 8, 308, 0.39412, 1),
-      (309, 4, 309, 0.307541, 1),
-      (310, 12, 310, 0.248605, 1),
-      (311, 7, 311, 0.355666, 1),
-      (312, 2, 312, 0.281351, 1),
-      (313, 5, 313, 0.273729, 1),
-      (314, 3, 314, 0.311203, 1),
-      (315, 4, 315, 0.201065, 1),
-      (316, 13, 316, 0.314165, 1),
-      (317, 15, 317, 0.446712, 1),
-      (318, 1, 318, 0.26218, 1),
-      (319, 5, 319, 0.301893, 1),
-      (320, 4, 320, 0.185279, 1),
-      (321, 4, 321, 0.345347, 1),
-      (322, 12, 322, 0.359424, 1),
-      (323, 9, 323, 0.264779, 1),
-      (324, 0, 166, 0.490463, 0),
-      (325, 0, 325, 0.201236, 1),
-      (326, 1, 326, 0.380406, 1),
-      (327, 11, 327, 0.507844, 1),
-      (328, 2, 328, 0.315739, 1),
-      (329, 6, 329, 0.272988, 1),
-      (330, 9, 330, 0.372041, 1),
-      (331, 5, 331, 0.277039, 1),
-      (332, 4, 332, 0.308252, 1),
-      (333, 9, 333, 0.357428, 1),
-      (334, 1, 334, 0.320826, 1),
-      (335, 2, 335, 0.383721, 1),
-      (336, 11, 336, 0.277706, 1),
-      (337, 13, 337, 0.320976, 1),
-      (338, 5, 338, 0.282506, 1),
-      (339, 12, 339, 0.254563, 1),
-      (340, 15, 340, 0.413278, 1),
-      (341, 8, 341, 0.319196, 1),
-      (342, 4, 342, 0.314039, 1),
-      (343, 9, 343, 0.304443, 1),
-      (344, 4, 344, 0.28379, 1),
-      (345, 1, 345, 0.317256, 1),
-      (346, 15, 346, 0.200815, 1),
-      (347, 6, 347, 0.433051, 1),
-      (348, 0, 348, 0.368216, 1),
-      (349, 9, 349, 0.453269, 1),
-      (350, 8, 350, 0.305159, 1),
-      (351, 8, 351, 0.334064, 1),
-      (352, 11, 352, 0.329325, 1),
-      (353, 12, 353, 0.44886, 1),
-      (354, 6, 354, 0.266207, 1),
-      (355, 5, 355, 0.489538, 1),
-      (356, 8, 356, 0.327038, 1),
-      (357, 7, 357, 0.335749, 1),
-      (358, 11, 358, 0.214312, 1),
-      (359, 2, 359, 0.340828, 1),
-      (360, 13, 360, 0.38431, 1),
-      (361, 7, 361, 0.331413, 1),
-      (362, 9, 362, 0.303286, 1),
-      (363, 15, 363, 0.423279, 1),
-      (364, 1, 364, 0.36559, 1),
-      (365, 7, 365, 0.309422, 1),
-      (366, 2, 366, 0.375655, 1),
-      (367, 0, 367, 0.396742, 1),
-      (368, 4, 368, 0.205944, 1),
-      (369, 1, 369, 0.396285, 1),
-      (370, 9, 370, 0.409095, 1),
-      (371, 7, 371, 0.211911, 1),
-      (372, 12, 372, 0.157459, 1),
-      (373, 1, 373, 0.338254, 1),
-      (374, 1, 374, 0.409425, 1),
-      (375, 7, 375, 0.356437, 1),
-      (376, 12, 376, 0.28938, 1),
-      (377, 5, 377, 0.305501, 1),
-      (378, 2, 378, 0.326221, 1),
-      (379, 3, 379, 0.39396, 1),
-      (380, 0, 380, 0.427031, 1),
-      (381, 4, 381, 0.307947, 1),
-      (382, 3, 382, 0.374826, 1),
-      (383, 14, 383, 0.21873, 1),
-      (384, 7, 384, 0.340712, 1),
-      (385, 7, 385, 0.293137, 1),
-      (386, 12, 386, 0.473551, 1),
-      (387, 5, 387, 0.264787, 1),
-      (388, 7, 388, 0.337099, 1),
-      (389, 9, 389, 0.402361, 1),
-      (390, 10, 390, 0.32829, 1),
-      (391, 8, 391, 0.317879, 1),
-      (392, 3, 392, 0.37354, 1),
-      (393, 9, 393, 0.19193, 1),
-      (394, 10, 394, 0.234887, 1),
-      (395, 11, 395, 0.264021, 1),
-      (396, 8, 396, 0.379129, 1),
-      (397, 13, 397, 0.446206, 1),
-      (398, 1, 398, 0.369739, 1),
-      (399, 11, 399, 0.414144, 1),
-      (400, 6, 400, 0.322457, 1),
-      (401, 3, 401, 0.377397, 1),
-      (402, 12, 402, 0.463978, 1),
-      (403, 0, 403, 0.367017, 1),
-      (404, 15, 404, 0.340872, 1),
-      (405, 9, 405, 0.39312, 1),
-      (406, 4, 406, 0.368015, 1),
-      (407, 5, 407, 0.464678, 1),
-      (408, 15, 408, 0.332122, 1),
-      (409, 14, 409, 0.342719, 1),
-      (410, 14, 410, 0.4219, 1),
-      (411, 5, 411, 0.332172, 1),
-      (412, 10, 412, 0.42656, 1),
-      (413, 7, 413, 0.354176, 1),
-      (414, 13, 414, 0.42796, 1),
-      (415, 7, 415, 0.340052, 1),
-      (416, 2, 416, 0.393745, 1),
-      (417, 5, 417, 0.414057, 1),
-      (418, 3, 418, 0.244803, 1),
-      (419, 9, 419, 0.376427, 1),
-      (420, 12, 420, 0.135343, 1),
-      (421, 3, 421, 0.380628, 1),
-      (422, 7, 422, 0.342752, 1),
-      (423, 7, 423, 0.327598, 1),
-      (424, 2, 424, 0.459405, 1),
-      (425, 2, 425, 0.444276, 1),
-      (426, 4, 426, 0.430035, 1),
-      (427, 5, 427, 0.213839, 1),
-      (428, 8, 428, 0.541958, 1),
-      (429, 6, 429, 0.420819, 1),
-      (430, 5, 430, 0.281142, 1),
-      (431, 13, 431, 0.309846, 1),
-      (432, 3, 432, 0.29104, 1),
-      (433, 12, 433, 0.311272, 1),
-      (434, 8, 434, 0.363377, 1),
-      (435, 4, 435, 0.168006, 1),
-      (436, 7, 436, 0.398017, 1),
-      (437, 1, 437, 0.274681, 1),
-      (438, 13, 156, 0.459808, 0),
-      (439, 10, 439, 0.328713, 1),
-      (440, 0, 440, 0.227147, 1),
-      (441, 5, 441, 0.307013, 1),
-      (442, 7, 442, 0.310693, 1),
-      (443, 7, 443, 0.46482, 1),
-      (444, 14, 444, 0.259741, 1),
-      (445, 4, 445, 0.372316, 1),
-      (446, 11, 446, 0.334648, 1),
-      (447, 3, 447, 0.437198, 1),
-      (448, 12, 448, 0.245381, 1),
-      (449, 13, 449, 0.31274, 1),
-      (450, 12, 450, 0.350292, 1),
-      (451, 6, 451, 0.400922, 1),
-      (452, 10, 452, 0.287891, 1),
-      (453, 9, 453, 0.359411, 1),
-      (454, 13, 454, 0.201682, 1),
-      (455, 5, 455, 0.252211, 1),
-      (456, 6, 456, 0.264427, 1),
-      (457, 3, 457, 0.284676, 1),
-      (458, 3, 458, 0.247728, 1),
-      (459, 11, 459, 0.224341, 1),
-      (460, 10, 460, 0.376657, 1),
-      (461, 13, 461, 0.265326, 1),
-      (462, 5, 462, 0.268479, 1),
-      (463, 1, 463, 0.219358, 1),
-      (464, 2, 464, 0.340764, 1),
-      (465, 0, 465, 0.334029, 1),
-      (466, 15, 169, 0.382153, 1),
-      (467, 15, 467, 0.268784, 1),
-      (468, 13, 468, 0.357056, 1),
-      (469, 8, 469, 0.442929, 1),
-      (470, 2, 470, 0.372703, 1),
-      (471, 4, 471, 0.206903, 1),
-      (472, 0, 472, 0.404947, 1),
-      (473, 7, 473, 0.43178, 1),
-      (474, 8, 474, 0.339367, 1),
-      (475, 1, 475, 0.333248, 1),
-      (476, 8, 476, 0.27324, 1),
-      (477, 8, 477, 0.378189, 1),
-      (478, 2, 478, 0.291779, 1),
-      (479, 13, 479, 0.350056, 1),
-      (480, 2, 480, 0.425388, 1),
-      (481, 7, 481, 0.422908, 1),
-      (482, 9, 482, 0.307, 1),
-      (483, 11, 483, 0.247544, 1),
-      (484, 5, 484, 0.334962, 1),
-      (485, 12, 485, 0.505386, 1),
-      (486, 15, 486, 0.265815, 1),
-      (487, 1, 487, 0.356934, 1),
-      (488, 15, 488, 0.324349, 1),
-      (489, 6, 489, 0.240051, 1),
-      (490, 10, 490, 0.313751, 1),
-      (491, 11, 491, 0.392119, 1),
-      (492, 15, 492, 0.295937, 1),
-      (493, 9, 493, 0.3112, 1),
-      (494, 3, 494, 0.405854, 1),
-      (495, 1, 495, 0.25904, 1),
-      (496, 11, 496, 0.402402, 1),
-      (497, 10, 497, 0.25276, 1),
-      (498, 7, 498, 0.497511, 1),
-      (499, 9, 499, 0.425708, 1),
-    ],
-  },
-}
+PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "oracle_goldens.json.gz")
+
+
+@functools.cache
+def load() -> dict:
+    """``{"COLS", "ORDER", "ROWS"}``, read once per process and shared by
+    every caller, so callers must not mutate it. JSON keeps ints, ``repr``
+    floats and strings exact; the discriminator keys come back as strings,
+    which format to the same SQL text."""
+    with gzip.open(PATH, "rt", encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def save(cols: dict, order: dict, rows: dict) -> None:
+    """Write the goldens reproducibly (no timestamp or name in the gzip
+    header), so the same rows give the same bytes."""
+    data = json.dumps({"COLS": cols, "ORDER": order, "ROWS": rows}, separators=(",", ":"))
+    with open(PATH, "wb") as raw, gzip.GzipFile(filename="", mode="wb", fileobj=raw, mtime=0) as fh:
+        fh.write(data.encode("utf-8"))
 
 
 def _lit(v) -> str:
@@ -19240,11 +58,12 @@ def values_oracle(name: str) -> str:
     """Literal VALUES oracle for one pinned query, scale-gated on the
     documents content discriminator so the same SQL is exact at both
     correctness scales."""
-    cols = COLS[name]
+    goldens = load()
+    cols = goldens["COLS"][name]
     collist = ", ".join(c for c, _ in cols)
     sel = ", ".join(f"CAST({c} AS {t}) AS {c}" for c, t in cols)
     branches = []
-    for disc, recs in ROWS[name].items():
+    for disc, recs in goldens["ROWS"][name].items():
         gate = f"(SELECT sum(length(text)) FROM documents) = {disc}"
         if not recs:
             null_sel = ", ".join(
@@ -19259,4 +78,4 @@ def values_oracle(name: str) -> str:
             f"SELECT {sel} FROM (VALUES\n{vals}\n) AS g({collist})\n"
             f"WHERE {gate}"
         )
-    return "\nUNION ALL\n".join(branches) + f"\nORDER BY {ORDER[name]}"
+    return "\nUNION ALL\n".join(branches) + f"\nORDER BY {goldens['ORDER'][name]}"

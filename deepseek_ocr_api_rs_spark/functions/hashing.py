@@ -53,11 +53,6 @@ SIMHASH_BITS = 24           # bits of word_key voted into the fingerprint
 TOKEN_REGEX = "[a-z0-9]+"
 
 
-def tokens_spark(text_col: str) -> str:
-    """Spark SQL: distinct lowercase tokens of a text column."""
-    return f"array_distinct(regexp_extract_all(lower({text_col}), '{TOKEN_REGEX}', 0))"
-
-
 def tokens_duckdb(text_col: str) -> str:
     return f"list_distinct(regexp_extract_all(lower({text_col}), '{TOKEN_REGEX}'))"
 
@@ -98,11 +93,6 @@ def word_key_duckdb(word_var: str = "w") -> str:
     )
 
 
-def keys_spark(text_col: str, shingle_n: int = 1) -> str:
-    src = tokens_spark(text_col) if shingle_n == 1 else shingles_spark(text_col, shingle_n)
-    return f"transform({src}, w -> {word_key_spark('w')})"
-
-
 def keys_duckdb(text_col: str, shingle_n: int = 1) -> str:
     src = tokens_duckdb(text_col) if shingle_n == 1 else shingles_duckdb(text_col, shingle_n)
     return f"list_transform({src}, w -> {word_key_duckdb('w')})"
@@ -110,14 +100,6 @@ def keys_duckdb(text_col: str, shingle_n: int = 1) -> str:
 
 # ---------------------------------------------------------------------------
 # MinHash signature: array of k minima (NULL-safe: empty docs → NULL sig)
-
-def minhash_spark(keys_expr: str) -> str:
-    mins = ", ".join(
-        f"array_min(transform({keys_expr}, k -> ({a} * k + {b}) % {P}))"
-        for a, b in MINHASH_PARAMS
-    )
-    return f"array({mins})"
-
 
 def minhash_duckdb(keys_expr: str) -> str:
     mins = ", ".join(

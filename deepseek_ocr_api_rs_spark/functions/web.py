@@ -311,20 +311,6 @@ def extract_jsonld(df, html_col: str = "html") -> "DataFrame":  # noqa: F821
     )
 
 
-def extract_jsonld_duckdb(html_expr: str) -> str:
-    """DuckDB mirror: list of {ld_raw, ld_type, ld_name} structs (RE2
-    's' flag; json_valid guards the malformed-island NULL contract)."""
-    blk = _JSONLD_BLOCK_RE.replace("'", "''")
-    return (
-        f"list_transform(regexp_extract_all({html_expr}, '(?i){blk}', 1, 's'), "
-        "b -> {'ld_raw': trim(b), "
-        "'ld_type': case when json_valid(trim(b)) then "
-        "json_extract_string(trim(b), '$.\"@type\"') end, "
-        "'ld_name': case when json_valid(trim(b)) then "
-        "json_extract_string(trim(b), '$.name') end})"
-    )
-
-
 def extract_og_meta(df, html_col: str = "html") -> "DataFrame":  # noqa: F821
     """(…, html) rows → one row per OpenGraph tag with (og_prop,
     og_content) — attribute order inside the tag does not matter (prop
@@ -347,18 +333,6 @@ def extract_og_meta(df, html_col: str = "html") -> "DataFrame":  # noqa: F821
         .withColumn("og_content", F.col("_e.og_content"))
         .drop("_e")
         .filter((F.col("og_prop") != "") & (F.col("og_content") != ""))
-    )
-
-
-def extract_og_meta_duckdb(html_expr: str) -> str:
-    """DuckDB mirror: list of {og_prop, og_content} structs."""
-    tag = _OG_TAG_RE.replace("'", "''")
-    prop = _OG_PROP_RE.replace("'", "''")
-    cont = _OG_CONTENT_RE.replace("'", "''")
-    return (
-        f"list_transform(regexp_extract_all({html_expr}, '(?is){tag}', 1), "
-        f"t -> {{'og_prop': regexp_extract(t, '(?i){prop}', 1), "
-        f"'og_content': regexp_extract(t, '(?i){cont}', 1)}})"
     )
 
 
@@ -766,17 +740,6 @@ def extract_headings(df, html_col: str = "html") -> "DataFrame":  # noqa: F821
     )
 
 
-def extract_headings_duckdb(html_expr: str) -> str:
-    """DuckDB mirror: a list of (idx, level, title) STRUCTs (unnest at
-    the call site; list_transform's 1-based index supplies idx)."""
-    return f"""list_transform(
-  regexp_extract_all({html_expr}, '{_HEADING_BLOCK_RE}'),
-  (b, i) -> struct_pack(
-    idx := i - 1,
-    lvl := cast(regexp_extract(b, '{_HEADING_LEVEL_RE}', 1) as int),
-    title := trim(regexp_replace(regexp_replace(b, '{_TAG_STRIP_RE}', '', 'g'), '{_WS_COLLAPSE_RE}', ' ', 'g'))))"""
-
-
 # ---------------------------------------------------------------------------
 # anchor-text aggregation (r7) — the classic web-corpus link derivative:
 # the anchor texts pointing AT a url describe that url (search ranking,
@@ -814,19 +777,6 @@ def extract_anchor_texts(
         .withColumn("anchor_text", text)
         .drop("_ablock")
     )
-
-
-def extract_anchor_texts_duckdb(
-    html_expr: str, base_expr: str
-) -> str:
-    """DuckDB mirror: a list of (href, text) STRUCTs — unnest, filter,
-    and resolve (absolutize_href_duckdb) at the call site."""
-    href_pat = ("(?i)" + _HREF_ATTR_RE).replace("'", "''")
-    return f"""list_transform(
-  regexp_extract_all({html_expr}, '{_ANCHOR_BLOCK_RE}'),
-  b -> struct_pack(
-    href := regexp_extract(b, '{href_pat}', 1),
-    txt := trim(regexp_replace(regexp_replace(b, '{_TAG_STRIP_RE}', '', 'g'), '{_WS_COLLAPSE_RE}', ' ', 'g'))))"""
 
 
 # ---------------------------------------------------------------------------

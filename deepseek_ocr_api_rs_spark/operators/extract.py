@@ -9,12 +9,14 @@ parallelism replaces the reference's rayon fan-out
 do NOT nest thread pools inside the UDF).
 
 Scale design (SURVEY.md §7.2-6):
-- input explicitly repartitioned by xxhash64(url) with hot-host salting
-  (``operators.partitioning``) so a handful of mega-hosts cannot skew tasks;
-- extraction is map-only — ZERO shuffles after the repartition; at 100 TB
-  the only data movement is the one planned hash exchange;
-- per-partition metrics rows + checkpoint manifests (``operators.checkpoint``)
-  give lineage and resume.
+- extraction is map-only: the stage adds no exchange, so the job
+  (``operators.checkpoint.run_resumable_extraction``) reads, extracts and
+  writes each ``pmod(xxhash64(url), n_buckets)`` bucket with no shuffle;
+  ``operators.partitioning.repartition_by_url`` (one salted url-hash
+  exchange that spreads hot hosts) is for callers that want balanced tasks
+  first, such as ``bench.py``;
+- per-bucket checkpoint manifests (``operators.checkpoint``) give lineage
+  and resume.
 """
 
 from __future__ import annotations
@@ -75,19 +77,17 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def extract_documents(docs: DataFrame, langs: list[str] | None = None) -> DataFrame:
+def extract_documents(docs: DataFrame) -> DataFrame:
     """documents(url, warc_ts, html, text, lang) → extracted table.
 
-    The lang filter is applied BEFORE the UDF stage so Catalyst pushes it
-    into the parquet scan (early-termination analogue, SURVEY §4 — skip
-    non-target rows before the expensive stage); column pruning drops the
-    convenience ``text`` column at the scan (ReadSchema excludes it).
+    Column pruning drops the convenience ``text`` column at the scan
+    (ReadSchema excludes it). A filter the caller puts on ``docs`` (the
+    job's ``--langs``) sits below the UDF stage, so Catalyst pushes it into
+    the parquet scan (early-termination analogue, SURVEY §4 — skip
+    non-target rows before the expensive stage).
     """
     cols = ["url", "warc_ts", "html", "lang"]
-    selected = docs.select(*cols)
-    if langs:
-        selected = selected.filter(F.col("lang").isin(langs))
-    return selected.mapInPandas(_extract_batches, schema=EXTRACT_OUTPUT_SCHEMA)
+    return docs.select(*cols).mapInPandas(_extract_batches, schema=EXTRACT_OUTPUT_SCHEMA)
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

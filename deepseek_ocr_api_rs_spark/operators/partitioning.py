@@ -52,11 +52,6 @@ def repartition_by_url(
     return df.repartition(n_partitions, salted_key(url_col, salt_buckets))
 
 
-def partition_id_col() -> F.Column:
-    """Physical partition id — the checkpoint-manifest key."""
-    return F.spark_partition_id().alias("partition_id")
-
-
 @contextmanager
 def scoped_shuffle_partitions(spark, n: int | None):
     """Scoped spark.sql.shuffle.partitions override — the lever for

@@ -17,10 +17,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def count_exchanges(df: DataFrame) -> int:
     # AQE wraps the plan; count Exchange operators in the final string
     return physical_plan(df).count("Exchange")

@@ -1,6 +1,5 @@
-"""Table IO + the ``_metrics`` side table (reference §2.1 S10/S11 sinks:
-JSON response with usage counters / benchmark JSON → here, output table +
-metrics table committed together).
+"""Table IO (reference §2.1 S10 sink: the JSON response → here, the output
+table).
 
 Iceberg is the production target (atomic appends, snapshot-based resume);
 this container has no Iceberg runtime, so the layer is format-gated: the
@@ -10,10 +9,7 @@ Iceberg catalog is configured.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -33,32 +29,3 @@ def write_table(df: DataFrame, target: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(target)
     else:
         df.writeTo(target).append()
-
-
-def write_with_metrics(
-    extracted: DataFrame,
-    out_path: str,
-    metrics_path: str,
-    run_id: str = "run",
-) -> None:
-    """Commit results + per-partition metrics rows (the reference's
-    per-stage benchmark events, crates/core/src/benchmark.rs:63-68, as a
-    table). Metrics are computed FROM THE WRITTEN DATA so they reconcile
-    exactly with what readers see (write-then-measure ordering, same as the
-    checkpoint manifest protocol)."""
-    spark = extracted.sparkSession
-    write_table(extracted, out_path)
-    written = spark.read.parquet(out_path)
-    metrics = (
-        written.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("n_chars"),
-            F.sum("n_blocks_total").alias("n_blocks_total"),
-            F.sum("n_blocks_accepted").alias("n_blocks_accepted"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("committed_ts", F.lit(time.time()))
-    )
-    metrics.write.mode("append").parquet(metrics_path)

@@ -5,8 +5,8 @@ VERDICT r6 ask #1: the driver can only hash-check queries carrying an
 deterministic (doc_id-seeded synthesis, pinned hashes, no RNG anywhere) —
 so their outputs at the two correctness scales ARE the oracle. This script
 runs each query at sf0.001 (the pytest replica scale) and sf0.01 (the
-driver scale) and regenerates
-``deepseek_ocr_api_rs_spark/fixtures/oracle_goldens.py`` with the rows,
+driver scale) and rewrites
+``deepseek_ocr_api_rs_spark/fixtures/oracle_goldens.json.gz`` with the rows,
 keyed by the scale discriminator ``sum(length(text))`` over ``documents``
 (the two corpora share doc_ids 0-499 but differ in text, so a content
 scalar — not a row count — tells the scales apart).
@@ -15,12 +15,14 @@ Regenerate ONLY when an operator's pinned behavior intentionally changes:
 
     python scripts/pin_oracle_goldens.py
 
-The module is imported by ``__spark_entry__.oracle_sql()``; exactness is
-then enforced bitwise by tests/test_queries_oracle.py and the driver gate.
+``fixtures/oracle_goldens.py`` loads the file for
+``__spark_entry__.oracle_sql()``; exactness is then enforced bitwise by
+tests/test_queries_oracle.py and tests/test_pinned_goldens.py.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -62,7 +64,7 @@ _SQL_TYPE = {  # Spark simpleString -> DuckDB cast target
 
 
 def _py(v):
-    """numpy scalar -> plain Python (repr-stable in the generated module)."""
+    """numpy scalar -> plain Python (repr-stable in the JSON data file)."""
     if hasattr(v, "item"):
         return v.item()
     return v
@@ -72,6 +74,7 @@ def main() -> None:
     import duckdb
 
     from deepseek_ocr_api_rs_spark.conf import build_session
+    from deepseek_ocr_api_rs_spark.fixtures import oracle_goldens
 
     import __spark_entry__ as entrymod
 
@@ -106,77 +109,9 @@ def main() -> None:
             print(f"   {name}: {len(pdf)} rows")
     assert len(set(discs)) == len(discs), f"scales not distinguishable: {discs}"
 
-    out = REPO / "deepseek_ocr_api_rs_spark" / "fixtures" / "oracle_goldens.py"
-    with out.open("w", encoding="utf-8") as f:
-        f.write(
-            '"""AUTO-GENERATED by scripts/pin_oracle_goldens.py — DO NOT EDIT.\n'
-            "\n"
-            "Pinned golden outputs of the non-SQL-expressible queries at the\n"
-            "two correctness scales (sf0.001 / sf0.01), keyed by the scale\n"
-            "discriminator sum(length(text)) over documents. values_oracle()\n"
-            "turns them into the literal VALUES SQL the DuckDB oracle runs —\n"
-            "flipping these queries from rows-only to hash-exact in the driver\n"
-            "gate (VERDICT r6 ask #1). Every pinned value is deterministic:\n"
-            "doc_id-seeded pixels, pinned hash families, RNG-free k-means.\n"
-            '"""\n\n'
-            "# fmt: off\n"
-        )
-        f.write(f"COLS = {cols!r}\n\n")
-        f.write(f"ORDER = {PINNED!r}\n\n")
-        f.write("ROWS = {\n")
-        for name in PINNED:
-            f.write(f"  {name!r}: {{\n")
-            for disc, recs in rows[name].items():
-                f.write(f"    {disc}: [\n")
-                for rec in recs:
-                    f.write(f"      {rec!r},\n")
-                f.write("    ],\n")
-            f.write("  },\n")
-        f.write("}\n")
-        f.write(
-            '''
-
-def _lit(v) -> str:
-    """One SQL literal. Floats use repr() — the shortest round-trip form,
-    so DuckDB's text->double parse reproduces the exact bits the Spark
-    side computed (the driver hash has no tolerance)."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    return repr(v)
-
-
-def values_oracle(name: str) -> str:
-    """Literal VALUES oracle for one pinned query, scale-gated on the
-    documents content discriminator so the same SQL is exact at both
-    correctness scales."""
-    cols = COLS[name]
-    collist = ", ".join(c for c, _ in cols)
-    sel = ", ".join(f"CAST({c} AS {t}) AS {c}" for c, t in cols)
-    branches = []
-    for disc, recs in ROWS[name].items():
-        gate = f"(SELECT sum(length(text)) FROM documents) = {disc}"
-        if not recs:
-            null_sel = ", ".join(
-                f"CAST(NULL AS {t}) AS {c}" for c, t in cols
-            )
-            branches.append(f"SELECT {null_sel} WHERE FALSE AND {gate}")
-            continue
-        vals = ",\\n".join(
-            "(" + ", ".join(_lit(v) for v in rec) + ")" for rec in recs
-        )
-        branches.append(
-            f"SELECT {sel} FROM (VALUES\\n{vals}\\n) AS g({collist})\\n"
-            f"WHERE {gate}"
-        )
-    return "\\nUNION ALL\\n".join(branches) + f"\\nORDER BY {ORDER[name]}"
-'''
-        )
-    print(f"wrote {out} ({out.stat().st_size} bytes)")
-
+    oracle_goldens.save(cols, PINNED, rows)
+    size = os.path.getsize(oracle_goldens.PATH)
+    print(f"wrote {oracle_goldens.PATH} ({size} bytes)")
 
 if __name__ == "__main__":
     main()

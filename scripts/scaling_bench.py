@@ -18,14 +18,28 @@ import subprocess
 import sys
 from datetime import datetime, timezone
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from bench_common import REPO, run_bench as _run_bench  # noqa: E402
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run_bench(cpus: int, n_docs: int) -> dict:
-    return _run_bench(
-        cpus=cpus, n_docs=n_docs, extraction_only=True, timeout=900
+    """Run ``bench.py`` (extraction only) in a fresh subprocess at
+    ``local[cpus]`` and parse its last line, the headline JSON record."""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS=str(cpus),
+        BENCH_N_DOCS=str(n_docs),
+        BENCH_EXTRACTION_ONLY="1",
     )
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py")],
+        env=env, capture_output=True, text=True, timeout=900, cwd=REPO,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(
+            f"bench.py failed (rc={out.returncode}):\n" + out.stderr[-2000:]
+        )
+    return json.loads(lines[-1])
 
 
 def _wait_for_quiet(max_wait: float, quiet_load: float) -> None:
@@ -151,86 +165,13 @@ the exchange is the only cross-machine traffic and it is uniform by
 construction.
 
 Raw runs: `BENCH/scaling.json`.
+
+## Comparison discipline
+
+Performance claims between commits come from interleaved same-box runs of
+`perfbench/run.py` (see `perfbench/README.md`), never from wall-clock
+numbers stored by an earlier run.
 """
-    md += """
-## Comparison discipline (pinned — VERDICT r4 ask #7)
-
-Round-over-round performance claims use **task-CPU seconds at FIXED
-parallelism from interleaved same-box runs** — never wall-clock compared
-across rounds (the r3/r4 verdicts measured same-code wall spread
-exceeding real round deltas on this shared box). Each round factors its
-delta into two artifacts:
-
-- **code effect** — `scripts/round_compare.py`: the previous round's
-  commit in a git worktree, bench runs alternating base/HEAD at the SAME
-  corpus version and cpu count, best-of-N per query →
-  `BENCH/round_compare.json`;
-- **corpus effect** — `scripts/corpus_cost.py`: HEAD code, old vs new
-  corpus grammar interleaved → `BENCH/corpus_cost_v{A}_v{B}.json`.
-"""
-    import re as _re
-
-    bench_dir = os.path.join(REPO, "BENCH")
-    for name in sorted(os.listdir(bench_dir)):
-        if not (name.startswith("corpus_cost") and name.endswith(".json")):
-            continue
-        try:
-            cc = json.load(open(os.path.join(bench_dir, name)))
-            vers = sorted(
-                int(m.group(1))
-                for k in cc
-                for m in [_re.match(r"cpu_sec_v(\d+)$", k)]
-                if m
-            )
-            if len(vers) != 2:
-                continue
-            a, b = vers
-            md += f"""
-## Corpus v{a} → v{b} cost (isolated, interleaved best-of-{cc['repeats']})
-
-| corpus | task-CPU sec (best) | docs/sec (best) |
-|---|---|---|
-| v{a} | {cc[f'cpu_sec_v{a}']} | {cc[f'docs_per_sec_v{a}']:,.0f} |
-| v{b} | {cc[f'cpu_sec_v{b}']} | {cc[f'docs_per_sec_v{b}']:,.0f} |
-
-cpu ratio v{b}/v{a} = {cc[f'cpu_ratio_v{b}_over_v{a}']}. Raw runs:
-`BENCH/{name}` ({cc['generated_at']}).
-"""
-        except Exception:
-            pass
-    rc_path = os.path.join(bench_dir, "round_compare.json")
-    if os.path.exists(rc_path):
-        try:
-            rc = json.load(open(rc_path))
-            md += f"""
-## Code cost vs previous round (interleaved, fixed {rc['cpus']} cpus, corpus v{rc['corpus_compat']}, best-of-{rc['repeats']})
-
-Base `{rc['base_ref']}` vs head `{rc['head_ref']}`: total task-CPU
-{rc['cpu_sec_total_base']}s → {rc['cpu_sec_total_head']}s
-(**ratio {rc['cpu_ratio_head_over_base']}**). Largest per-query moves:
-
-| query | base cpu s | head cpu s | ratio |
-|---|---|---|---|
-"""
-            moved = sorted(
-                rc["queries"].items(),
-                key=lambda kv: abs((kv[1]["ratio_head_over_base"] or 1) - 1),
-                reverse=True,
-            )[:8]
-            for q, d in moved:
-                md += (
-                    f"| {q} | {d['base_cpu_sec']} | {d['head_cpu_sec']} "
-                    f"| {d['ratio_head_over_base']} |\n"
-                )
-            if rc.get("queries_only_in_head"):
-                md += (
-                    "\nNew queries this round (no base side): "
-                    + ", ".join(rc["queries_only_in_head"])
-                    + ".\n"
-                )
-            md += "\nFull table: `BENCH/round_compare.json`.\n"
-        except Exception:
-            pass
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(md)
     print(json.dumps(report, indent=2)[:400])

@@ -3,8 +3,6 @@ markdown strip, passthrough semantics, corpus v11 golden slice."""
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from deepseek_ocr_api_rs_spark.extraction.batch import extract_batch
@@ -78,7 +76,7 @@ def test_scalar_batch_parity_on_markdown():
         assert bat.n_blocks_accepted[i] == ref.n_blocks_accepted
 
 
-def test_corpus_v11_has_markdown_slice_and_v10_does_not():
+def test_corpus_has_markdown_slice():
     from deepseek_ocr_api_rs_spark.fixtures import corpus
 
     df = corpus.make_documents(500)
@@ -86,13 +84,6 @@ def test_corpus_v11_has_markdown_slice_and_v10_does_not():
     counts = out["branch"].value_counts().to_dict()
     assert counts.get("text", 0) >= 5  # ~3% of 500
     assert counts["html"] > 400 and counts["pdf"] > 10 and counts["error"] > 0
-    os.environ["SPARK_GRAFT_CORPUS_COMPAT"] = "10"
-    try:
-        df10 = corpus.make_documents(500)
-        out10 = extract_batch(list(df10["html"]))
-        assert "text" not in set(out10["branch"])
-    finally:
-        del os.environ["SPARK_GRAFT_CORPUS_COMPAT"]
 
 
 def test_goldens_carry_the_text_branch_slice():

@@ -257,7 +257,7 @@ def test_contamination_probe_is_broadcast(spark):
 def test_jpeg_progressive_resize_map_only_after_repartition(spark):
     """q_jpeg_progressive_resize (r9 shape): the ≤192 distinct payloads
     are synthesized once on a small keys table and attached by BROADCAST
-    join (fixture-synthesis dedup, guide §8); the decode+resize stage is
+    join (fixture-synthesis dedup, guide §3.1); the decode+resize stage is
     still a map-only Arrow chain over the corpus — the corpus side never
     shuffles between the explicit repartition and the final orderBy, and
     the only non-broadcast exchanges touch the tiny residue-key table."""

@@ -53,10 +53,11 @@ def test_schema_version_pinned(spark):
 
 
 def test_lang_filter_pushed_down(spark, corpus_path):
-    """Catalyst must push the lang predicate into the parquet scan and prune
-    the unused text column (SURVEY §4 early-termination analogue)."""
-    docs = spark.read.parquet(corpus_path)
-    plan = extract_documents(docs, langs=["en"])._jdf.queryExecution().executedPlan().toString()
+    """Catalyst must push the caller's lang predicate (the job's --langs)
+    through the extraction stage into the parquet scan and prune the unused
+    text column (SURVEY §4 early-termination analogue)."""
+    docs = spark.read.parquet(corpus_path).filter(F.col("lang").isin(["en"]))
+    plan = extract_documents(docs)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "lang" in plan.split("PushedFilters")[1][:200]
     # ReadSchema must not include the convenience `text` column
