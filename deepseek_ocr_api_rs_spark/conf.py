@@ -6,6 +6,8 @@ crates/config/src/config.rs:296-324) as env-var > caller kwargs > defaults.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -76,19 +78,32 @@ def build_session(
     return spark
 
 
+def _zip_path() -> str:
+    return os.path.join(
+        tempfile.gettempdir(), f"deepseek_ocr_api_rs_spark-{os.getpid()}.zip"
+    )
+
+
+def _remove_zip() -> None:
+    """At exit, remove the zip of the exiting process. A forked child that
+    inherited this hook has another pid, so it never removes its parent's."""
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(_zip_path())
+
+
 def package_zip() -> str:
     """Zip this package for --py-files-style shipping (north_rule:
-    'packaged for spark-submit --py-files'). Cached per process.
+    'packaged for spark-submit --py-files'). Cached per process and removed
+    when the process exits.
 
     Only ``.py`` files ship: data files such as the driver-side oracle
     goldens never reach executors. The zip is built under a temporary name
     and renamed into place, so a build that fails part-way leaves no
     truncated zip for the cache check to pass on."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"deepseek_ocr_api_rs_spark-{os.getpid()}.zip"
-    )
+    zip_path = _zip_path()
     if not os.path.exists(zip_path):
+        atexit.register(_remove_zip)
         tmp_path = zip_path + ".tmp"
         with zipfile.ZipFile(tmp_path, "w", zipfile.ZIP_DEFLATED) as zf:
             for root, _dirs, files in os.walk(pkg_dir):

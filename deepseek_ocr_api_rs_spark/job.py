@@ -9,8 +9,8 @@
 
 Config precedence mirrors the reference (CLI > env > defaults,
 crates/config/src/config.rs:296-324): argparse flags > SPARK_GRAFT_* env >
-conf.py defaults. The job is resumable: re-running after a kill picks up at
-the first uncommitted bucket (operators.checkpoint).
+conf.py defaults. The job is resumable: re-running after a kill redoes only
+the uncommitted buckets (operators.checkpoint).
 """
 
 from __future__ import annotations
@@ -28,7 +28,13 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--checkpoint-dir", required=True)
     p.add_argument("--metrics-path", default=None)
     p.add_argument("--langs", default=None, help="comma-separated lang filter")
-    p.add_argument("--n-buckets", type=int, default=8)
+    p.add_argument(
+        "--n-buckets",
+        type=int,
+        default=8,
+        help="url-hash buckets: both the commit unit of a resumable run and "
+        "the extraction's task count; a resume must use the same value",
+    )
     p.add_argument("--run-id", default=None)
     p.add_argument("--master", default=None)
     p.add_argument("--shuffle-partitions", type=int, default=None)

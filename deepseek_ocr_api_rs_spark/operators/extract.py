@@ -9,12 +9,13 @@ parallelism replaces the reference's rayon fan-out
 do NOT nest thread pools inside the UDF).
 
 Scale design (SURVEY.md §7.2-6):
-- extraction is map-only: the stage adds no exchange, so the job
-  (``operators.checkpoint.run_resumable_extraction``) reads, extracts and
-  writes each ``pmod(xxhash64(url), n_buckets)`` bucket with no shuffle;
-  ``operators.partitioning.repartition_by_url`` (one salted url-hash
-  exchange that spreads hot hosts) is for callers that want balanced tasks
-  first, such as ``bench.py``;
+- extraction is map-only: the stage adds no exchange of its own. The job
+  (``operators.checkpoint.run_resumable_extraction``) puts one
+  bucket-aligned exchange in front of it, so each task extracts exactly
+  one ``pmod(xxhash64(url), n_buckets)`` bucket, and writes all buckets
+  in one pass; ``operators.partitioning.repartition_by_url`` (one salted
+  url-hash exchange that spreads hot hosts) is for callers that want
+  balanced tasks instead, such as ``bench.py``;
 - per-bucket checkpoint manifests (``operators.checkpoint``) give lineage
   and resume.
 """
