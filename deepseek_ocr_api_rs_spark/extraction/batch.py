@@ -31,11 +31,6 @@ from deepseek_ocr_api_rs_spark.extraction.pdf_spans import (
     parse_pdf_payload,
 )
 
-DOC_SCHEMA_COLUMNS = [
-    "extracted_text", "branch", "n_chars", "n_blocks_total", "n_blocks_accepted",
-    "span_starts", "span_ends", "truncated",
-]
-
 
 @dataclass
 class BlockPool:

@@ -200,7 +200,9 @@ def extract_pdf(data: bytes) -> ExtractionResult:
         branch="pdf",
         n_chars=len(text),
         n_blocks_total=len(spans),
-        n_blocks_accepted=len(spans),
+        # undecodable spans count toward the total but are not accepted,
+        # as in extraction.batch
+        n_blocks_accepted=sum(1 for s in spans if not s.get("undecodable")),
     )
 
 

@@ -157,6 +157,8 @@ def run_resumable_extraction(
     from deepseek_ocr_api_rs_spark.operators.extract import extract_documents
 
     _check_n_buckets(checkpoint_dir, n_buckets)
+    if committed_buckets(spark, checkpoint_dir) >= set(range(n_buckets)):
+        return 0  # nothing left to do: start no Spark job
     todo = resume_filter(with_bucket(docs, n_buckets), spark, checkpoint_dir)
     extracted = extract_documents(todo.repartitionById(n_buckets, "bucket"))
     staging = os.path.join(output_dir, STAGING)

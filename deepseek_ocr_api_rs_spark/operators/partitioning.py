@@ -60,8 +60,8 @@ def scoped_shuffle_partitions(spark, n: int | None):
     table): their shuffles should be sized to that table, not to the
     session's corpus-sized default, and eagerly-materialized frames
     bypass AQE's runtime coalescing, so the conf is the effective
-    control. Mirrors streaming.jobs._state_partitions. No-op when n
-    is None; always restores the prior value."""
+    control. Streaming jobs scope their state-store partition count
+    with it too. No-op when n is None; always restores the prior value."""
     if n is None:
         yield
         return

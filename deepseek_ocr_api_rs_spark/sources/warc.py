@@ -1,20 +1,36 @@
-"""WARC ingestion — Common Crawl's actual container format (ISO 28500 /
-WARC 1.0, public spec).
+"""The Common Crawl container family: WARC ingestion (ISO 28500 / WARC
+1.0, public spec) and its WET text, WAT metadata and CDX index exports.
 
 The pipeline's input_hint table (url, warc_ts, html, text, lang) is what a
 crawl looks like AFTER ingestion; this module supplies the ingestion step
 itself: parse ``.warc.gz`` files (each record its own gzip member, the
 Common-Crawl convention — concatenated members decode in one stdlib
 ``gzip.decompress`` pass), keep ``WARC-Type: response`` records, split the
-HTTP response envelope off, and emit input_hint-schema rows.
+HTTP response envelope off, and emit input_hint-schema rows. A writer
+(``make_warc_gz``) assembles spec-conformant fixtures so the parser is
+tested against real container bytes.
 
-Spark shape: ``spark.read.format("binaryFile")`` gives one row per WARC
-file (path, bytes); an Arrow ``mapInPandas`` stage fans each file out into
-its records — a map-only plan, no shuffle. Common Crawl cuts WARCs at ~1 GB
-so file-per-task parallelism is the natural unit; the segment files ARE the
-partitions. A writer (``make_warc_gz``) assembles spec-conformant fixtures
-so the parser is tested against real container bytes, and the parsed rows
-feed ``operators.extract.extract_documents`` directly (end-to-end test).
+Every format shares one set of container mechanics:
+
+- **Encoder** (``_warc_member``): one record → one gzip member whose
+  header mtime is pinned to 0 (``write_cdx``'s one gzip stream too), so
+  equal records always give equal bytes.
+- **Sink** (``_segment_sink``, behind ``write_wet``/``write_wat``/
+  ``write_cdx``): each task streams its partition, one Arrow batch at a
+  time, into a tmp file private to its attempt, then ``os.replace``-s it
+  to a segment named after its partition and yields one manifest row
+  ``(file, n_records)``. A retried or speculative attempt thus overwrites
+  the first attempt's byte-identical segment, never adds a duplicate; an
+  empty partition writes no file; an attempt that raises removes its tmp
+  file. The caller's partitioning sizes the segments.
+- **Scan** (``_scan_segments``, behind ``read_warc_documents``/
+  ``read_wet_documents``/``read_wat_metadata``/``index_warc_segments``):
+  ``spark.read.format("binaryFile")`` gives one row per segment file and
+  an Arrow ``mapInPandas`` stage fans each file out into its rows — a
+  map-only plan, no shuffle; Common Crawl's ~1 GB segment files ARE the
+  partitions. Record dates are cut to whole seconds (WARC 1.1 fractions
+  dropped) and parsed with ``try_to_timestamp``: a malformed date yields
+  NULL, never an ANSI-mode DateTimeException aborting the job.
 
 HTTP-envelope realism (all routine in real Common Crawl segments):
 - ``Transfer-Encoding: chunked`` bodies are de-chunked (RFC 9112 §7.1);
@@ -31,21 +47,23 @@ HTTP-envelope realism (all routine in real Common Crawl segments):
   their block is the bare HTTP headers of an identical refetch) never
   surface as documents;
 - ``WARC-Truncated`` records are tolerated: parsed normally, payload
-  as-stored, the flag surfaced per record;
-- WARC 1.1 fractional-second dates are normalized and timestamp parsing
-  uses ``try_to_timestamp`` — a malformed date yields NULL, never an
-  ANSI-mode DateTimeException aborting the whole ingestion job.
+  as-stored, the flag surfaced per record.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import gzip
-import io
+import json
+import os
 import re
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterable, Iterator
+from urllib.parse import quote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _CRLF = b"\r\n"
@@ -70,6 +88,70 @@ def _chunk_encode(payload: bytes, chunk_size: int = 97) -> bytes:
     return bytes(out)
 
 
+# ---------------------------------------------------------------------------
+# The record encoder — one gzip member per record, for every format
+
+# the header gzip.compress writes at level 9 (OS "unknown"), with mtime 0
+# instead of the wall clock; gzip.compress(mtime=0) would switch to zlib's
+# header, whose OS byte differs
+_GZIP_HEADER = b"\x1f\x8b\x08\x00\x00\x00\x00\x00\x02\xff"
+
+
+def _gzip_member(data: bytes) -> bytes:
+    return (
+        _GZIP_HEADER
+        + zlib.compress(data, 9, wbits=-15)
+        + struct.pack("<LL", zlib.crc32(data), len(data) & 0xFFFFFFFF)
+    )
+
+
+def _warc_date_str(date) -> str:
+    if date is None:
+        date = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    if date.microsecond:  # WARC 1.1 fractional seconds
+        return date.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"
+    return date.strftime("%Y-%m-%dT%H:%M:%SZ")
+
+
+def _urn(n: int) -> str:
+    return f"<urn:uuid:00000000-0000-0000-0000-{n:012d}>"
+
+
+def _uri(url) -> str:
+    """WARC-Target-URI must be a URI (ASCII): map raw IRI codepoints to
+    UTF-8 percent-escapes (RFC 3987 §3.1) instead of crashing the sink task
+    on ``.encode('latin-1')``. ASCII urls — including already
+    percent-encoded ones — pass through byte-identical."""
+    return quote(str(url), safe=":/?#[]@!$&'()*+,;=%-._~")
+
+
+def _warc_member(
+    rtype: str,
+    url: str,
+    date: dt.datetime | None,
+    record_id: int,
+    content_type: str,
+    extra_headers: str,
+    payload: bytes,
+) -> bytes:
+    """One WARC/1.0 record as ONE gzip member (ISO 28500 §D: a reader can
+    seek to a record offset and inflate just that member, and a sink can
+    stream members to an open file without materializing the segment).
+    ``extra_headers`` are complete CRLF-terminated lines placed between
+    ``WARC-Record-ID`` and ``Content-Type``."""
+    head = (
+        "WARC/1.0\r\n"
+        f"WARC-Type: {rtype}\r\n"
+        f"WARC-Target-URI: {url}\r\n"
+        f"WARC-Date: {_warc_date_str(date)}\r\n"
+        f"WARC-Record-ID: {_urn(record_id)}\r\n"
+        + extra_headers
+        + f"Content-Type: {content_type}\r\n"
+        f"Content-Length: {len(payload)}\r\n\r\n"
+    ).encode("latin-1")
+    return _gzip_member(head + payload + _CRLF + _CRLF)
+
+
 def make_warc_gz(records: list[dict]) -> bytes:
     """Assemble a real ``.warc.gz``: one gzip MEMBER per record (the
     Common-Crawl layout — a reader can seek to a record offset and inflate
@@ -81,68 +163,49 @@ def make_warc_gz(records: list[dict]) -> bytes:
     three, plus a ``date`` with microseconds (emitted as a WARC 1.1
     fractional-second timestamp), cover the envelope variants real
     Common Crawl segments contain."""
-    out = bytearray()
+    out = []
     for rec in records:
         rtype = rec.get("type", "response")
-        url = rec.get("url", "")
-        date = rec.get("date") or dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
         payload = bytes(rec.get("payload", b""))
+        extra = (
+            f"WARC-Truncated: {rec['truncated']}\r\n"
+            if rec.get("truncated")
+            else ""
+        )
+        ctype = "application/http; msgtype=response"
         if rtype == "response":
-            status = int(rec.get("status", 200))
-            ctype = rec.get("content_type", "text/html; charset=utf-8")
             if rec.get("chunked"):
                 body = _chunk_encode(payload)
                 framing = "Transfer-Encoding: chunked\r\n"
             else:
                 body = payload
                 framing = f"Content-Length: {len(payload)}\r\n"
-            http = (
-                f"HTTP/1.1 {status} OK\r\n"
-                f"Content-Type: {ctype}\r\n" + framing + "\r\n"
+            block = (
+                f"HTTP/1.1 {int(rec.get('status', 200))} OK\r\n"
+                f"Content-Type: "
+                f"{rec.get('content_type', 'text/html; charset=utf-8')}\r\n"
+                + framing
+                + "\r\n"
             ).encode("latin-1") + body
         elif rtype == "revisit":
             # dedup record (ubiquitous in real segments): the block is the
             # bare HTTP response HEADERS of the revisited fetch, no body
-            status = int(rec.get("status", 200))
-            http = (
-                f"HTTP/1.1 {status} OK\r\n"
+            block = (
+                f"HTTP/1.1 {int(rec.get('status', 200))} OK\r\n"
                 "Content-Type: text/html; charset=utf-8\r\n\r\n"
             ).encode("latin-1")
-        else:
-            http = payload
-        if date.microsecond:  # WARC 1.1 fractional seconds
-            date_s = date.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"
-        else:
-            date_s = date.strftime("%Y-%m-%dT%H:%M:%SZ")
-        trunc = (
-            f"WARC-Truncated: {rec['truncated']}\r\n"
-            if rec.get("truncated")
-            else ""
-        )
-        if rtype == "revisit":
-            trunc += (
+            extra += (
                 "WARC-Profile: http://netpreserve.org/warc/1.0/revisit/"
-                "identical-payload-digest\r\n"
-                "WARC-Refers-To: <urn:uuid:00000000-0000-0000-0000-"
-                "000000000001>\r\n"
+                f"identical-payload-digest\r\nWARC-Refers-To: {_urn(1)}\r\n"
             )
-        head = (
-            "WARC/1.0\r\n"
-            f"WARC-Type: {rtype}\r\n"
-            f"WARC-Target-URI: {url}\r\n"
-            f"WARC-Date: {date_s}\r\n"
-            "WARC-Record-ID: <urn:uuid:00000000-0000-0000-0000-000000000000>\r\n"
-            + trunc
-            + (
-                'Content-Type: application/http; msgtype=response\r\n'
-                if rtype in ("response", "revisit")
-                else "Content-Type: application/octet-stream\r\n"
+        else:
+            block, ctype = payload, "application/octet-stream"
+        out.append(
+            _warc_member(
+                rtype, rec.get("url", ""), rec.get("date"), 0, ctype, extra, block
             )
-            + f"Content-Length: {len(http)}\r\n\r\n"
-        ).encode("latin-1")
-        member = head + http + _CRLF + _CRLF
-        out += gzip.compress(member)
-    return bytes(out)
+        )
+    return b"".join(out)
 
 
 def _parse_headers(block: bytes) -> dict[str, str]:
@@ -271,32 +334,24 @@ _WARC_DATE_RE = re.compile(
 _TEXT_MIMES = frozenset({"", "text/html", "application/xhtml+xml"})
 
 
-def read_warc_documents(
+# ---------------------------------------------------------------------------
+# The segment scan — shared by every reader that opens container bytes
+
+
+def _scan_segments(
     spark: SparkSession,
     path: str,
-    keep_mimes: frozenset[str] | set[str] = DEFAULT_KEEP_MIMES,
-    keep_statuses: range | set[int] = range(200, 300),
-    glob: str = "*.warc*",
+    glob: str,
+    rows_of: Callable[[str, bytes], Iterable[tuple]],
+    schema: str,
 ) -> DataFrame:
-    """``.warc(.gz)`` files → input_hint-schema DataFrame of the response
-    records. binaryFile scan (one row per WARC file) → Arrow fan-out into
-    records; map-only, file-per-task parallelism (Common Crawl's ~1 GB
-    segment files are the natural partition unit).
-
-    Envelope handling: only ``keep_mimes`` responses are emitted; chunked
-    bodies are de-chunked in the fan-out; for text mimes the declared
-    charset is decoded into the ``text`` column (source text — downstream
-    extraction replaces it) and a non-UTF-8 payload is re-encoded to UTF-8
-    in ``html`` so the extraction branch's UTF-8 assumption holds;
-    truncated records are kept as stored. WARC 1.1 fractional-second dates
-    are normalized in the fan-out, and parsing uses ``try_to_timestamp``:
-    a malformed/missing date becomes a NULL ``warc_ts`` instead of an
-    ANSI-mode DateTimeException aborting the job (ADVICE r3)."""
+    """The ``glob`` files under ``path`` → ``schema`` rows, one per tuple
+    that ``rows_of(file name, file bytes)`` yields. The glob matters:
+    crawl landing dirs carry manifests/temp files alongside segments."""
     import pandas as pd
 
-    keep = frozenset(keep_mimes)
-    # crawl landing dirs carry manifests/temp files alongside segments —
-    # only *.warc* names are containers
+    # column names of a flat DDL string whose types hold no ", "
+    names = [field.split()[0] for field in schema.split(", ")]
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
@@ -306,65 +361,147 @@ def read_warc_documents(
 
     def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            urls, tss, payloads, texts = [], [], [], []
-            for blob in pdf["content"]:
-                for rec in iter_warc_records(bytes(blob)):
-                    if rec["type"] != "response" or not rec["url"]:
-                        continue
-                    if rec["mime"] not in keep:
-                        continue
-                    # only successful fetches carry page content worth
-                    # extracting (404/5xx bodies are server chrome); a
-                    # record with NO parsed HTTP envelope (bare payload)
-                    # is kept — old-crawl convention
-                    if rec["status"] is not None and rec["status"] not in keep_statuses:
-                        continue
-                    payload = rec["payload"]
-                    text = ""
-                    if rec["mime"] in _TEXT_MIMES:
-                        charset = rec["charset"] or "utf-8"
-                        try:
-                            text = payload.decode(charset, "replace")
-                        except LookupError:  # unknown charset label
-                            text = payload.decode("utf-8", "replace")
-                        if charset not in ("utf-8", "utf8", "ascii", "us-ascii"):
-                            try:
-                                strict = payload.decode(charset)
-                            except (UnicodeDecodeError, LookupError):
-                                strict = None
-                            if strict is not None:
-                                payload = strict.encode("utf-8")
-                            # else: mislabeled charset — keep the ORIGINAL
-                            # bytes; re-encoding the replace-decoded string
-                            # would bake U+FFFD over recoverable content
-                            # (ADVICE r4)
-                    dm = _WARC_DATE_RE.match(rec["date"])
-                    tss.append(dm.group(1) + "Z" if dm else None)
-                    urls.append(rec["url"])
-                    payloads.append(payload)
-                    texts.append(text)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts_raw": tss,
-                    "html": payloads,
-                    "text": texts,
-                }
-            )
+            rows = [
+                row
+                for p, blob in zip(pdf["path"], pdf["content"])
+                for row in rows_of(os.path.basename(p), bytes(blob))
+            ]
+            yield pd.DataFrame(rows, columns=names)
 
-    raw = files.mapInPandas(
-        fan_out,
-        schema="url string, warc_ts_raw string, html binary, text string",
+    return files.mapInPandas(fan_out, schema=schema)
+
+
+def _date_key(warc_date: str) -> str | None:
+    """A WARC-Date cut to whole seconds (WARC 1.1 fractions dropped), the
+    ``_ts`` column ``_warc_ts`` parses; None if malformed."""
+    m = _WARC_DATE_RE.match(warc_date)
+    return m.group(1) if m else None
+
+
+def _warc_ts() -> Column:
+    return F.try_to_timestamp(
+        F.col("_ts"), F.lit("yyyy-MM-dd'T'HH:mm:ss")
+    ).alias("warc_ts")
+
+
+def read_warc_documents(
+    spark: SparkSession,
+    path: str,
+    keep_mimes: frozenset[str] | set[str] = DEFAULT_KEEP_MIMES,
+    keep_statuses: range | set[int] = range(200, 300),
+    glob: str = "*.warc*",
+) -> DataFrame:
+    """``.warc(.gz)`` files → input_hint-schema DataFrame of the response
+    records, through the shared segment scan.
+
+    Envelope handling: only ``keep_mimes`` responses are emitted; chunked
+    bodies are de-chunked in the fan-out; for text mimes the declared
+    charset is decoded into the ``text`` column (source text — downstream
+    extraction replaces it) and a non-UTF-8 payload is re-encoded to UTF-8
+    in ``html`` so the extraction branch's UTF-8 assumption holds;
+    truncated records are kept as stored; a malformed/missing date becomes
+    a NULL ``warc_ts``."""
+    keep = frozenset(keep_mimes)
+
+    def rows_of(_: str, blob: bytes) -> Iterator[tuple]:
+        for rec in iter_warc_records(blob):
+            if rec["type"] != "response" or not rec["url"]:
+                continue
+            if rec["mime"] not in keep:
+                continue
+            # only successful fetches carry page content worth extracting
+            # (404/5xx bodies are server chrome); a record with NO parsed
+            # HTTP envelope (bare payload) is kept — old-crawl convention
+            if rec["status"] is not None and rec["status"] not in keep_statuses:
+                continue
+            payload = rec["payload"]
+            text = ""
+            if rec["mime"] in _TEXT_MIMES:
+                charset = rec["charset"] or "utf-8"
+                try:
+                    text = payload.decode(charset, "replace")
+                except LookupError:  # unknown charset label
+                    text = payload.decode("utf-8", "replace")
+                if charset not in ("utf-8", "utf8", "ascii", "us-ascii"):
+                    try:
+                        strict = payload.decode(charset)
+                    except (UnicodeDecodeError, LookupError):
+                        strict = None
+                    if strict is not None:
+                        payload = strict.encode("utf-8")
+                    # else: mislabeled charset — keep the ORIGINAL bytes;
+                    # re-encoding the replace-decoded string would bake
+                    # U+FFFD over recoverable content (ADVICE r4)
+            yield rec["url"], _date_key(rec["date"]), payload, text
+
+    rows = _scan_segments(
+        spark, path, glob, rows_of, "url string, _ts string, html binary, text string"
     )
-    return raw.select(
-        "url",
-        F.try_to_timestamp(
-            "warc_ts_raw", F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")
-        ).alias("warc_ts"),
-        "html",
-        "text",
-        F.lit("unknown").alias("lang"),
+    return rows.select(
+        "url", _warc_ts(), "html", "text", F.lit("unknown").alias("lang")
     )
+
+
+# ---------------------------------------------------------------------------
+# The segment sink — shared by write_wet, write_wat and write_cdx
+
+
+def _segment_sink(
+    out_dir: str,
+    name: str,
+    encode: Callable[..., bytes],
+    open_segment: Callable = lambda path: open(path, "wb"),
+) -> Callable:
+    """The per-task function a writer hands to ``mapInPandas``: it streams
+    ``encode(*row)`` for every input row into ``open_segment(tmp)`` and
+    publishes the segment ``name.format(partitionId)`` under ``out_dir``
+    (contract in the module docstring). The tmp path carries
+    ``taskAttemptId()``: 'wb' on a tmp file shared by two live attempts
+    would interleave their writes and could publish a corrupt gzip."""
+    os.makedirs(out_dir, exist_ok=True)
+
+    def sink(batches: Iterator) -> Iterator:
+        import pandas as pd
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else os.getpid()
+        attempt = ctx.taskAttemptId() if ctx is not None else 0
+        segment = name.format(pid)
+        tmp = os.path.join(out_dir, f".{segment}.{attempt}.tmp")
+        n_recs = 0
+        try:
+            with contextlib.ExitStack() as stack:
+                out = None
+                for pdf in batches:
+                    for row in zip(*(pdf[c] for c in pdf.columns)):
+                        if out is None:
+                            out = stack.enter_context(open_segment(tmp))
+                        out.write(encode(*row))
+                        n_recs += 1
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
+        if n_recs == 0:
+            yield pd.DataFrame({"file": [], "n_records": []})
+            return
+        os.replace(tmp, os.path.join(out_dir, segment))
+        yield pd.DataFrame({"file": [segment], "n_records": [n_recs]})
+
+    return sink
+
+
+_MANIFEST_SCHEMA = "file string, n_records long"
+
+
+def _row_date(ts) -> dt.datetime | None:
+    """A timestamp cell of an Arrow batch → datetime (None for NULL)."""
+    import pandas as pd
+
+    if ts is None or pd.isna(ts):
+        return None
+    return ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
 
 
 # ---------------------------------------------------------------------------
@@ -374,12 +511,12 @@ def read_warc_documents(
 # is the pipeline's natural OUTPUT container: extraction results become
 # seekable, member-per-record text shards any WARC tool can read back.
 
+_REFERS_TO_0 = f"WARC-Refers-To: {_urn(0)}\r\n"
+
 
 def make_wet_gz(records: list[dict]) -> bytes:
     """Assemble ``.wet.gz`` bytes: one gzip member per conversion record.
     Record dicts: {"url": str, "date": datetime, "text": str}."""
-    from urllib.parse import quote
-
     return b"".join(make_wet_record_gz(rec) for rec in records)
 
 
@@ -387,31 +524,15 @@ def make_wet_record_gz(rec: dict) -> bytes:
     """One conversion record as ONE gzip member (ISO 28500 §D: WET files
     are member-per-record concatenations, so a sink can stream members to
     an open file without ever materializing the segment)."""
-    from urllib.parse import quote
-
-    # WARC-Target-URI must be a URI (ASCII): map raw IRI codepoints
-    # to UTF-8 percent-escapes (RFC 3987 §3.1) instead of crashing
-    # the sink task on .encode('latin-1') (code-review r6). ASCII
-    # urls — including already-percent-encoded ones — pass through
-    # byte-identical.
-    url = quote(str(rec.get("url", "")), safe=":/?#[]@!$&'()*+,;=%-._~")
-    date = rec.get("date") or dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    payload = str(rec.get("text", "")).encode("utf-8")
-    if date.microsecond:
-        date_s = date.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"
-    else:
-        date_s = date.strftime("%Y-%m-%dT%H:%M:%SZ")
-    head = (
-        "WARC/1.0\r\n"
-        "WARC-Type: conversion\r\n"
-        f"WARC-Target-URI: {url}\r\n"
-        f"WARC-Date: {date_s}\r\n"
-        "WARC-Record-ID: <urn:uuid:00000000-0000-0000-0000-000000000002>\r\n"
-        "WARC-Refers-To: <urn:uuid:00000000-0000-0000-0000-000000000000>\r\n"
-        "Content-Type: text/plain\r\n"
-        f"Content-Length: {len(payload)}\r\n\r\n"
-    ).encode("latin-1")
-    return gzip.compress(head + payload + _CRLF + _CRLF)
+    return _warc_member(
+        "conversion",
+        _uri(rec.get("url", "")),
+        rec.get("date"),
+        2,
+        "text/plain",
+        _REFERS_TO_0,
+        str(rec.get("text", "")).encode("utf-8"),
+    )
 
 
 def write_wet(
@@ -422,140 +543,53 @@ def write_wet(
     text_col: str = "extracted_text",
 ) -> DataFrame:
     """Distributed WET sink: each task writes its partition as one
-    ``.wet.gz`` segment (tmp-file + atomic rename, so a killed task never
-    leaves a half-segment a reader could pick up) and emits a manifest
+    ``part-{partitionId}.warc.wet.gz`` segment through the shared segment
+    sink (atomic, retry-safe; see ``_segment_sink``) and emits a manifest
     row (file, n_records). Map-only — the caller controls partitioning
     (and therefore segment sizing) upstream; Common Crawl's ~150 MB WET
-    segments ≈ one task's worth. The returned manifest is lazy: an
-    action on it IS the write.
+    segments ≈ one task's worth. The returned manifest is lazy: an action
+    on it IS the write."""
 
-    Memory + retry semantics (ADVICE r6): gzip members stream to the tmp
-    file per record — per-task RSS is bounded by one Arrow batch, never
-    the segment — and the segment name derives from the TASK IDENTITY
-    (``part-{partitionId}``), so a retried or speculative attempt
-    ``os.replace``-overwrites the first attempt's identical output
-    instead of committing a duplicate uuid-named segment. The TMP path
-    additionally carries ``taskAttemptId()`` so two live attempts of
-    the same partition never write into one file (ADVICE r7)."""
-    import os
+    def encode(url, ts, text) -> bytes:
+        return make_wet_record_gz(
+            {"url": url, "date": _row_date(ts), "text": text or ""}
+        )
 
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else os.getpid()
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        name = f"part-{pid:05d}.warc.wet.gz"
-        # tmp is keyed by ATTEMPT id, not just partition id: a speculative
-        # attempt (or a zombie task racing its retry) must never share a
-        # tmp path with another live attempt — 'wb' on a shared path would
-        # interleave writes and os.replace could publish a corrupt gzip.
-        # Each attempt writes privately; whichever replaces last wins with
-        # identical content (the segment NAME stays partition-keyed).
-        tmp = os.path.join(out_dir, f".{name}.{attempt}.tmp")
-        n_recs = 0
-        fh = None
-        try:
-            for pdf in batches:
-                for url, ts, text in zip(
-                    pdf[url_col], pdf[ts_col], pdf[text_col]
-                ):
-                    date = None
-                    if ts is not None and not pd.isna(ts):
-                        date = (
-                            ts.to_pydatetime()
-                            if hasattr(ts, "to_pydatetime")
-                            else ts
-                        )
-                    if fh is None:
-                        fh = open(tmp, "wb")
-                    fh.write(
-                        make_wet_record_gz(
-                            {"url": url, "date": date, "text": text or ""}
-                        )
-                    )
-                    n_recs += 1
-        finally:
-            if fh is not None:
-                fh.close()
-        if n_recs == 0:
-            yield pd.DataFrame({"file": [], "n_records": []})
-            return
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n_records": [n_recs]})
-
+    sink = _segment_sink(out_dir, "part-{:05d}.warc.wet.gz", encode)
     return df.select(url_col, ts_col, text_col).mapInPandas(
-        sink, schema="file string, n_records long"
+        sink, schema=_MANIFEST_SCHEMA
     )
 
 
 def read_wet_documents(spark: SparkSession, path: str) -> DataFrame:
     """``.wet(.gz)`` files → (url, warc_ts, text) rows from the
-    conversion records; same binaryFile + Arrow fan-out shape as
-    read_warc_documents (map-only, file-per-task)."""
-    import pandas as pd
+    conversion records, through the shared segment scan."""
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wet*")
-        .load(path)
-        .select("content")
+    def rows_of(_: str, blob: bytes) -> Iterator[tuple]:
+        for rec in iter_warc_records(blob):
+            if rec["type"] == "conversion" and rec["url"]:
+                text = rec["payload"].decode("utf-8", "replace")
+                yield rec["url"], _date_key(rec["date"]), text
+
+    rows = _scan_segments(
+        spark, path, "*.wet*", rows_of, "url string, _ts string, text string"
     )
-
-    def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, tss, texts = [], [], []
-            for blob in pdf["content"]:
-                for rec in iter_warc_records(bytes(blob)):
-                    if rec["type"] != "conversion" or not rec["url"]:
-                        continue
-                    urls.append(rec["url"])
-                    m = _WARC_DATE_RE.match(rec["date"])
-                    tss.append(m.group(1) if m else None)
-                    texts.append(rec["payload"].decode("utf-8", "replace"))
-            yield pd.DataFrame({"url": urls, "_ts": tss, "text": texts})
-
-    rows = files.mapInPandas(fan_out, schema="url string, _ts string, text string")
-    return rows.select(
-        "url",
-        F.try_to_timestamp(F.col("_ts"), F.lit("yyyy-MM-dd'T'HH:mm:ss")).alias(
-            "warc_ts"
-        ),
-        "text",
-    )
+    return rows.select("url", _warc_ts(), "text")
 
 
 # ---------------------------------------------------------------------------
 # WAT derivative (r7) — Common Crawl's metadata sibling of WET: one
 # WARC-Type: metadata record per page whose payload is a JSON envelope
 # (Envelope.WARC-Header-Metadata + Envelope.Payload-Metadata.HTML-Metadata
-# with Head.Title and the outgoing Links). Same member-per-record gzip
-# container, same streaming task-identity sink contract as write_wet.
-
-
-def _warc_date_str(date) -> str:
-    if date is None:
-        date = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    if date.microsecond:
-        return date.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"
-    return date.strftime("%Y-%m-%dT%H:%M:%SZ")
+# with Head.Title and the outgoing Links).
 
 
 def make_wat_record_gz(rec: dict) -> bytes:
     """One metadata record as ONE gzip member. Record dict:
     {"url": str, "date": datetime, "title": str|None,
     "links": list[str]}. The JSON payload is CANONICAL (sorted keys,
-    compact separators) so equal inputs always produce identical bytes —
-    the WET determinism contract extended to the JSON envelope."""
-    import json
-    from urllib.parse import quote
-
-    url = quote(str(rec.get("url", "")), safe=":/?#[]@!$&'()*+,;=%-._~")
-    date_s = _warc_date_str(rec.get("date"))
+    compact separators) so equal inputs always produce identical bytes."""
+    url = _uri(rec.get("url", ""))
     html_meta: dict = {
         "Links": [{"url": u} for u in rec.get("links") or []],
     }
@@ -564,7 +598,7 @@ def make_wat_record_gz(rec: dict) -> bytes:
     envelope = {
         "Envelope": {
             "WARC-Header-Metadata": {
-                "WARC-Date": date_s,
+                "WARC-Date": _warc_date_str(rec.get("date")),
                 "WARC-Target-URI": url,
                 "WARC-Type": "response",
             },
@@ -576,17 +610,9 @@ def make_wat_record_gz(rec: dict) -> bytes:
     payload = json.dumps(
         envelope, sort_keys=True, separators=(",", ":")
     ).encode("utf-8")
-    head = (
-        "WARC/1.0\r\n"
-        "WARC-Type: metadata\r\n"
-        f"WARC-Target-URI: {url}\r\n"
-        f"WARC-Date: {date_s}\r\n"
-        "WARC-Record-ID: <urn:uuid:00000000-0000-0000-0000-000000000003>\r\n"
-        "WARC-Refers-To: <urn:uuid:00000000-0000-0000-0000-000000000000>\r\n"
-        "Content-Type: application/json\r\n"
-        f"Content-Length: {len(payload)}\r\n\r\n"
-    ).encode("latin-1")
-    return gzip.compress(head + payload + _CRLF + _CRLF)
+    return _warc_member(
+        "metadata", url, rec.get("date"), 3, "application/json", _REFERS_TO_0, payload
+    )
 
 
 def write_wat(
@@ -597,134 +623,60 @@ def write_wat(
     title_col: str = "title",
     links_col: str = "links",
 ) -> DataFrame:
-    """Distributed WAT sink — the write_wet contract verbatim: one
-    ``.warc.wat.gz`` segment per task, gzip members STREAMED to a tmp
-    file per record (RSS bounded by one Arrow batch), segment name from
-    the task identity (``part-{partitionId}``) so a retried attempt
-    overwrites rather than duplicates, tmp+``os.replace`` atomic
-    publish, lazy manifest (file, n_records) as the return frame."""
-    import os
+    """Distributed WAT sink: one ``part-{partitionId}.warc.wat.gz``
+    segment per task through the shared segment sink (see
+    ``_segment_sink``), lazy manifest (file, n_records) as the return
+    frame."""
 
-    import pandas as pd
+    def encode(url, ts, title, links) -> bytes:
+        return make_wat_record_gz(
+            {
+                "url": url,
+                "date": _row_date(ts),
+                "title": title,
+                "links": list(links) if links is not None else [],
+            }
+        )
 
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else os.getpid()
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        name = f"part-{pid:05d}.warc.wat.gz"
-        # attempt-private tmp (see write_wet): concurrent speculative /
-        # zombie attempts must not interleave into one tmp file.
-        tmp = os.path.join(out_dir, f".{name}.{attempt}.tmp")
-        n_recs = 0
-        fh = None
-        try:
-            for pdf in batches:
-                for url, ts, title, links in zip(
-                    pdf[url_col], pdf[ts_col], pdf[title_col], pdf[links_col]
-                ):
-                    date = None
-                    if ts is not None and not pd.isna(ts):
-                        date = (
-                            ts.to_pydatetime()
-                            if hasattr(ts, "to_pydatetime")
-                            else ts
-                        )
-                    if fh is None:
-                        fh = open(tmp, "wb")
-                    fh.write(
-                        make_wat_record_gz(
-                            {
-                                "url": url,
-                                "date": date,
-                                "title": title,
-                                "links": list(links)
-                                if links is not None
-                                else [],
-                            }
-                        )
-                    )
-                    n_recs += 1
-        finally:
-            if fh is not None:
-                fh.close()
-        if n_recs == 0:
-            yield pd.DataFrame({"file": [], "n_records": []})
-            return
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n_records": [n_recs]})
-
+    sink = _segment_sink(out_dir, "part-{:05d}.warc.wat.gz", encode)
     return df.select(url_col, ts_col, title_col, links_col).mapInPandas(
-        sink, schema="file string, n_records long"
+        sink, schema=_MANIFEST_SCHEMA
     )
 
 
 def read_wat_metadata(spark: SparkSession, path: str) -> DataFrame:
     """``.wat(.gz)`` files → (url, warc_ts, title, links array<string>)
-    rows from the metadata records' JSON envelopes; binaryFile + Arrow
-    fan-out, map-only, file-per-task. Records whose payload is not the
-    expected envelope shape are skipped, never crash the task."""
-    import json
+    rows from the metadata records' JSON envelopes, through the shared
+    segment scan. Records whose payload is not the expected envelope
+    shape are skipped, never crash the task."""
 
-    import pandas as pd
+    def rows_of(_: str, blob: bytes) -> Iterator[tuple]:
+        for rec in iter_warc_records(blob):
+            if rec["type"] != "metadata" or not rec["url"]:
+                continue
+            try:
+                env = json.loads(rec["payload"].decode("utf-8"))["Envelope"]
+                hm = env["Payload-Metadata"]["HTTP-Response-Metadata"][
+                    "HTML-Metadata"
+                ]
+            except (ValueError, KeyError, UnicodeDecodeError):
+                continue
+            links = [
+                e["url"]
+                for e in hm.get("Links") or []
+                if isinstance(e, dict) and "url" in e
+            ]
+            title = (hm.get("Head") or {}).get("Title")
+            yield rec["url"], _date_key(rec["date"]), title, links
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wat*")
-        .load(path)
-        .select("content")
+    rows = _scan_segments(
+        spark,
+        path,
+        "*.wat*",
+        rows_of,
+        "url string, _ts string, title string, links array<string>",
     )
-
-    def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, tss, titles, links_out = [], [], [], []
-            for blob in pdf["content"]:
-                for rec in iter_warc_records(bytes(blob)):
-                    if rec["type"] != "metadata" or not rec["url"]:
-                        continue
-                    try:
-                        env = json.loads(rec["payload"].decode("utf-8"))[
-                            "Envelope"
-                        ]
-                        hm = env["Payload-Metadata"][
-                            "HTTP-Response-Metadata"
-                        ]["HTML-Metadata"]
-                    except (ValueError, KeyError, UnicodeDecodeError):
-                        continue
-                    urls.append(rec["url"])
-                    m = _WARC_DATE_RE.match(rec["date"])
-                    tss.append(m.group(1) if m else None)
-                    head = hm.get("Head") or {}
-                    titles.append(head.get("Title"))
-                    links_out.append(
-                        [
-                            e["url"]
-                            for e in hm.get("Links") or []
-                            if isinstance(e, dict) and "url" in e
-                        ]
-                    )
-            yield pd.DataFrame(
-                {
-                    "url": urls, "_ts": tss, "title": titles,
-                    "links": links_out,
-                }
-            )
-
-    rows = files.mapInPandas(
-        fan_out,
-        schema="url string, _ts string, title string, links array<string>",
-    )
-    return rows.select(
-        "url",
-        F.try_to_timestamp(F.col("_ts"), F.lit("yyyy-MM-dd'T'HH:mm:ss")).alias(
-            "warc_ts"
-        ),
-        "title",
-        "links",
-    )
+    return rows.select("url", _warc_ts(), "title", "links")
 
 
 # ---------------------------------------------------------------------------
@@ -740,57 +692,29 @@ def read_wat_metadata(spark: SparkSession, path: str) -> DataFrame:
 # — then segment i's keys all precede segment i+1's.
 
 
+@contextlib.contextmanager
+def _gzip_stream(path: str) -> Iterator[gzip.GzipFile]:
+    """One gzip stream over the whole segment, mtime pinned to 0."""
+    with open(path, "wb") as fh, gzip.GzipFile(
+        filename="", mode="wb", fileobj=fh, mtime=0
+    ) as gz:
+        yield gz
+
+
 def write_cdx(df: DataFrame, out_dir: str, line_col: str = "cdx_line") -> DataFrame:
-    """Distributed CDX sink — the write_wet/write_wat contract: one
-    segment per task named from the task identity (a retried or
-    speculative attempt OVERWRITES, never duplicates), lines streamed to
-    a tmp file through one gzip stream (mtime pinned to 0 so equal
-    inputs give byte-identical segments), tmp + ``os.replace`` atomic
-    publish, lazy manifest (file, n_records) as the return frame.
-    Sorts within the partition here (Spark's sort, spill-aware) so the
-    per-task Python loop stays O(1) memory."""
-    import gzip as _gzip
-    import os
-
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
+    """Distributed CDX sink: one ``cdx-{partitionId}.gz`` segment per task
+    through the shared segment sink (see ``_segment_sink``), lines
+    streamed through one gzip stream, lazy manifest (file, n_records) as
+    the return frame. Sorts within the partition here (Spark's sort,
+    spill-aware) so the per-task Python loop stays O(1) memory."""
+    sink = _segment_sink(
+        out_dir,
+        "cdx-{:05d}.gz",
+        lambda line: line.encode("utf-8") + b"\n",
+        _gzip_stream,
+    )
     src = df.select(line_col).sortWithinPartitions(line_col)
-
-    def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else os.getpid()
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        name = f"cdx-{pid:05d}.gz"
-        # attempt-private tmp (see write_wet): concurrent speculative /
-        # zombie attempts must not interleave into one tmp file.
-        tmp = os.path.join(out_dir, f".{name}.{attempt}.tmp")
-        n_recs = 0
-        gz = None
-        try:
-            for pdf in batches:
-                for line in pdf[line_col]:
-                    if gz is None:
-                        gz = _gzip.GzipFile(
-                            filename="", mode="wb", fileobj=open(tmp, "wb"),
-                            mtime=0,
-                        )
-                    gz.write(line.encode("utf-8") + b"\n")
-                    n_recs += 1
-        finally:
-            if gz is not None:
-                fh = gz.fileobj
-                gz.close()
-                fh.close()
-        if n_recs == 0:
-            yield pd.DataFrame({"file": [], "n_records": []})
-            return
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n_records": [n_recs]})
-
-    return src.mapInPandas(sink, schema="file string, n_records long")
+    return src.mapInPandas(sink, schema=_MANIFEST_SCHEMA)
 
 
 def read_cdx(spark: SparkSession, path: str) -> DataFrame:
@@ -882,52 +806,25 @@ def warc_member_index(data: bytes) -> list[dict]:
 
 def index_warc_segments(spark: SparkSession, path: str) -> DataFrame:
     """Distributed offset-index build over a directory of ``.warc.gz``
-    segments: binaryFile scan (one row per segment — segments ARE the
-    partitions) → Arrow fan-out to (filename, offset, length,
-    record_type, url, warc_date) rows. Map-only; at archive scale this
-    job IS how the CDX index gets built, and its output is the lookup
-    table ``fetch_warc_records_at`` point-reads against."""
-    import os as _os
+    segments: the shared segment scan fans each segment out to
+    (filename, offset, length, record_type, url, warc_date) rows. At
+    archive scale this job IS how the CDX index gets built, and its output
+    is the lookup table ``fetch_warc_records_at`` point-reads against."""
 
-    import pandas as pd
-
-    src = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select("path", "content")
-    )
-
-    def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                fname = _os.path.basename(p)
-                for e in warc_member_index(bytes(blob)):
-                    rows.append(
-                        (
-                            fname,
-                            e["offset"],
-                            e["length"],
-                            e["record_type"],
-                            e["url"],
-                            e["warc_date"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "filename", "offset", "length",
-                    "record_type", "url", "warc_date",
-                ],
+    def rows_of(fname: str, blob: bytes) -> Iterator[tuple]:
+        for e in warc_member_index(blob):
+            yield (
+                fname, e["offset"], e["length"],
+                e["record_type"], e["url"], e["warc_date"],
             )
 
-    return src.mapInPandas(
-        fan_out,
-        schema=(
-            "filename string, offset long, length long, "
-            "record_type string, url string, warc_date string"
-        ),
+    return _scan_segments(
+        spark,
+        path,
+        "*.warc.gz",
+        rows_of,
+        "filename string, offset long, length long, "
+        "record_type string, url string, warc_date string",
     )
 
 
@@ -951,8 +848,6 @@ def fetch_warc_records_at(index: DataFrame, warc_dir: str) -> DataFrame:
     is O(selected records), independent of archive size; the plan is
     map-only over the (tiny) index frame, so Spark never opens the
     unselected segments at all."""
-    import os as _os
-
     import pandas as pd
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -962,7 +857,7 @@ def fetch_warc_records_at(index: DataFrame, warc_dir: str) -> DataFrame:
                 pdf["filename"], pdf["offset"], pdf["length"]
             ):
                 rec = read_warc_record_at(
-                    _os.path.join(warc_dir, str(fname)), int(off), int(ln)
+                    os.path.join(warc_dir, str(fname)), int(off), int(ln)
                 )
                 if rec is None:
                     continue

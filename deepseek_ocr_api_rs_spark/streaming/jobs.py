@@ -13,42 +13,29 @@ lets the driver's DuckDB oracle check a streaming query.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deepseek_ocr_api_rs_spark.operators.partitioning import scoped_shuffle_partitions
+
+# spark.sql.shuffle.partitions for a stream's START (scoped by
+# operators.partitioning.scoped_shuffle_partitions). A stateful streaming
+# operator LOCKS its partition count at first start (it is baked into the
+# checkpoint), and every micro-batch pays a state-store open/commit per
+# partition PER STORE (a stream-stream join keeps four stores per
+# partition) — so the right number tracks expected STATE volume, not the
+# batch shuffle default (at sf-demo scale, 128 batch partitions = 128
+# near-empty state stores = pure overhead, ~4× the wall time of the actual
+# join; r9 measured the same effect again from 32 → 8: the watermark-commit
+# batch alone fell 2.9 s → 0.7 s, the whole join 9 s → 2.4 s, because
+# ≤10⁵ state rows never need 32 stores). A production clickstream sizes
+# this UP via the ``state_partitions`` parameter so per-partition state
+# fits executor memory; these demo jobs default to 8. ``None`` leaves the
+# session setting untouched.
 DEFAULT_STATE_PARTITIONS = 8
-
-
-@contextlib.contextmanager
-def _state_partitions(spark: SparkSession, n: int | None):
-    """Scope ``spark.sql.shuffle.partitions`` around a stream START.
-
-    A stateful streaming operator LOCKS its partition count at first start
-    (it is baked into the checkpoint), and every micro-batch pays a state-
-    store open/commit per partition PER STORE (a stream-stream join keeps
-    four stores per partition) — so the right number tracks expected
-    STATE volume, not the batch shuffle default (at sf-demo scale, 128
-    batch partitions = 128 near-empty state stores = pure overhead, ~4×
-    the wall time of the actual join; r9 measured the same effect again
-    from 32 → 8: the watermark-commit batch alone fell 2.9 s → 0.7 s,
-    the whole join 9 s → 2.4 s, because ≤10⁵ state rows never need 32
-    stores). A production clickstream sizes this UP via the
-    ``state_partitions`` parameter so per-partition state fits executor
-    memory; these demo jobs default to 8. ``n=None`` leaves the session
-    setting untouched."""
-    if n is None:
-        yield
-        return
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def hourly_event_counts_stream(
@@ -104,7 +91,7 @@ def hourly_event_counts_stream(
     )
     if checkpoint_dir:
         query = query.option("checkpointLocation", checkpoint_dir)
-    with _state_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, state_partitions):
         q = query.start()
         q.awaitTermination()
     return spark.table(sink)
@@ -284,7 +271,7 @@ def sessionize_stream(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     sink = f"sessions_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, state_partitions):
         q = (
             sessions.writeStream.format("memory")
             .queryName(sink)
@@ -348,7 +335,7 @@ def click_purchase_stream_join(
         (F.unix_timestamp("p_ts") - F.unix_timestamp("c_ts")).alias("gap_seconds"),
     )
     sink = f"join_result_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, state_partitions):
         q = (
             joined.writeStream.format("memory")
             .queryName(sink)
@@ -442,7 +429,7 @@ def hourly_event_counts_stream_append(
             "sum_value",
         )
     )
-    with _state_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, state_partitions):
         q = (
             agg.writeStream.format("parquet")
             .option("path", out_dir)
@@ -560,7 +547,7 @@ def streaming_dedup(
         )
     )
     sink = f"dedup_result_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, state_partitions):
         q = (
             deduped.writeStream.format("memory")
             .queryName(sink)
@@ -583,16 +570,11 @@ def extraction_stream(
     under `docs_path` are extracted incrementally (exactly-once via the
     streaming checkpoint — the job-level resume story for continuous
     ingestion, complementing operators.checkpoint for batch backfills)."""
-    from deepseek_ocr_api_rs_spark.operators.extract import (
-        EXTRACT_OUTPUT_SCHEMA,
-        _extract_batches,
-    )
+    from deepseek_ocr_api_rs_spark.operators.extract import extract_documents
 
     schema = spark.read.parquet(docs_path).schema
     stream = spark.readStream.schema(schema).parquet(docs_path)
-    extracted = stream.select("url", "warc_ts", "html", "lang").mapInPandas(
-        _extract_batches, schema=EXTRACT_OUTPUT_SCHEMA
-    )
+    extracted = extract_documents(stream)
     q = (
         extracted.writeStream.format("parquet")
         .option("path", out_dir)
@@ -632,17 +614,12 @@ def extraction_stream_to_snapshots(
     every batch; start a fresh table with a fresh checkpoint. Readers
     see only committed manifests, never a half-written batch.
     """
-    from deepseek_ocr_api_rs_spark.operators.extract import (
-        EXTRACT_OUTPUT_SCHEMA,
-        _extract_batches,
-    )
+    from deepseek_ocr_api_rs_spark.operators.extract import extract_documents
     from deepseek_ocr_api_rs_spark.sources import snapshots as snap
 
     schema = spark.read.parquet(docs_path).schema
     stream = spark.readStream.schema(schema).parquet(docs_path)
-    extracted = stream.select("url", "warc_ts", "html", "lang").mapInPandas(
-        _extract_batches, schema=EXTRACT_OUTPUT_SCHEMA
-    )
+    extracted = extract_documents(stream)
 
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         last = snap.last_stream_epoch(table_dir)
@@ -872,7 +849,7 @@ def click_purchase_stream_left_join(
             "gap_seconds"
         ),
     )
-    with _state_partitions(spark, state_partitions):
+    with scoped_shuffle_partitions(spark, state_partitions):
         q = (
             joined.writeStream.format("parquet")
             .option("path", out_dir)

@@ -17,8 +17,34 @@ from deepseek_ocr_api_rs_spark.extraction.batch import extract_batch, pool_html_
 from deepseek_ocr_api_rs_spark.extraction.reference import extract_document
 
 
+def _type0_undecodable_pdf() -> bytes:
+    """One page whose only span uses a Type0 font with the predefined
+    non-Unicode /Katakana CMap and no /ToUnicode: the span is undecodable,
+    so it counts toward n_blocks_total but not n_blocks_accepted."""
+    content = b"BT\n/F1 12 Tf\n72 720 Td\n<82A082A2> Tj\nET\n"
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>",
+        b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R "
+        b"/Resources << /Font << /F1 5 0 R >> >> >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(content), content),
+        b"<< /Type /Font /Subtype /Type0 /BaseFont /MS-Mincho "
+        b"/Encoding /Katakana >>",
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, body in enumerate(objs, 1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n%s\nendobj\n" % (num, body)
+    xref = len(out)
+    out += b"xref\n0 6\n0000000000 65535 f \n"
+    out += b"".join(b"%010d 00000 n \n" % off for off in offsets)
+    out += b"trailer\n<< /Size 6 /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" % xref
+    return bytes(out)
+
+
 def test_doc_level_byte_parity(corpus_pdf):
-    payloads = list(corpus_pdf.html)
+    payloads = list(corpus_pdf.html) + [_type0_undecodable_pdf()]
     bat = extract_batch(payloads)
     for i, payload in enumerate(payloads):
         ref = extract_document(payload)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from deepseek_ocr_api_rs_spark.operators.checkpoint import (
     committed_buckets,
     manifest_path,
+    read_manifest,
     run_resumable_extraction,
     with_bucket,
 )
@@ -138,3 +139,24 @@ def test_resume_with_other_n_buckets_raises(spark, corpus_path, tmp_path):
     with pytest.raises(ValueError, match=r"n_buckets=4.*n_buckets=8"):
         run_resumable_extraction(spark, docs, out, ckpt, n_buckets=8)
     assert len(committed_buckets(spark, ckpt)) == 2
+
+
+def test_resume_with_every_bucket_committed_runs_no_job(spark, corpus_path, tmp_path):
+    """A rerun whose every bucket is committed returns before it builds a
+    plan: no scan, no exchange, no empty _staging write."""
+    docs = spark.read.parquet(corpus_path)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    assert run_resumable_extraction(spark, docs, out, ckpt, n_buckets=8) == 8
+    sc = spark.sparkContext
+    group = "test_resume_with_every_bucket_committed_runs_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        done = run_resumable_extraction(
+            spark, docs, out, ckpt, n_buckets=8, run_id="rerun"
+        )
+    finally:
+        sc.setJobGroup("", "")
+    assert done == 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    assert read_manifest(ckpt).num_rows == 8

@@ -5,6 +5,10 @@ from __future__ import annotations
 
 import datetime as dt
 import gzip
+import os
+import time
+
+import pytest
 
 from deepseek_ocr_api_rs_spark.sources.warc import (
     iter_warc_records,
@@ -502,3 +506,90 @@ def test_warc_index_and_fetch_distributed(spark, tmp_path):
             f"<html><body><p>seg {seg} doc 2</p></body></html>".encode()
         )
         assert r.n_bytes == len(r.payload)
+
+
+def test_encoders_ignore_the_wall_clock(monkeypatch):
+    """Every member's gzip header carries mtime 0, so equal records give
+    equal bytes whatever the clock reads."""
+    from deepseek_ocr_api_rs_spark.sources.warc import (
+        iter_gzip_members,
+        make_wat_record_gz,
+        make_wet_record_gz,
+    )
+
+    recs, _ = _fixture_records()
+
+    def encode_all() -> list[bytes]:
+        return [
+            make_warc_gz(recs),
+            make_wet_record_gz({"url": "https://ex.org/a", "date": DATE, "text": "t"}),
+            make_wat_record_gz(
+                {"url": "https://ex.org/a", "date": DATE, "title": "T",
+                 "links": ["https://b.org/x"]}
+            ),
+        ]
+
+    monkeypatch.setattr(time, "time", lambda: 1e9)
+    first = encode_all()
+    monkeypatch.setattr(time, "time", lambda: 2e9)
+    assert encode_all() == first
+    for blob in first:
+        members = list(iter_gzip_members(blob))
+        assert members
+        for offset, _, _ in members:
+            assert blob[offset + 4 : offset + 8] == b"\0\0\0\0"
+
+
+@pytest.mark.parametrize("fmt", ["wet", "wat", "cdx"])
+def test_sink_retry_rewrites_identical_segments(spark, tmp_path, fmt):
+    """Rerunning a sink job (as a retried task does) more than a second
+    later leaves the same segment names with byte-identical contents and
+    no tmp dot-file."""
+    from pyspark.sql import functions as F
+
+    from deepseek_ocr_api_rs_spark.sources.warc import write_cdx, write_wat, write_wet
+
+    writer = {"wet": write_wet, "wat": write_wat, "cdx": write_cdx}[fmt]
+    url = F.concat(F.lit("https://r.example/"), F.col("id"))
+    rows = spark.range(0, 23).select(
+        url.alias("url"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id")).alias("warc_ts"),
+        F.concat(F.lit("body-"), F.col("id")).alias("extracted_text"),
+        F.concat(F.lit("title-"), F.col("id")).alias("title"),
+        F.array(F.concat(url, F.lit("/next"))).alias("links"),
+        F.concat(F.lit("example,r)/"), F.col("id"), F.lit(" 20240101 {}")).alias(
+            "cdx_line"
+        ),
+    ).repartition(4, "url")
+    out = str(tmp_path / fmt)
+
+    def segments() -> dict[str, bytes]:
+        return {f: open(os.path.join(out, f), "rb").read() for f in os.listdir(out)}
+
+    writer(rows, out).collect()
+    first = segments()
+    time.sleep(1.1)
+    writer(rows, out).collect()  # the "retry"
+    assert first
+    assert sorted(segments()) == sorted(first)
+    assert segments() == first
+    assert not any(f.startswith(".") for f in os.listdir(out))
+
+
+def test_segment_sink_removes_tmp_when_attempt_raises(tmp_path):
+    """An attempt whose input fails after one batch re-raises and leaves
+    neither a segment nor its tmp file."""
+    import pandas as pd
+
+    from deepseek_ocr_api_rs_spark.sources.warc import _segment_sink
+
+    out = tmp_path / "seg"
+    sink = _segment_sink(str(out), "part-{:05d}.warc.wet.gz", lambda s: s.encode())
+
+    def batches():
+        yield pd.DataFrame({"s": ["a", "b"]})
+        raise RuntimeError("attempt failed")
+
+    with pytest.raises(RuntimeError, match="attempt failed"):
+        list(sink(batches()))
+    assert os.listdir(out) == []
