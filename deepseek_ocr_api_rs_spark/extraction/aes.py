@@ -1,262 +1,98 @@
-"""AES-128/192/256 block cipher + CBC/ECB modes, stdlib-only (FIPS-197).
+"""AES-128/192/256 in CBC and ECB modes (FIPS-197), run by OpenSSL.
 
-Exists for one consumer: PDF encrypted-stream decryption
-(extraction/pdf_real.py) — /V 4 /AESV2 uses AES-128-CBC with a per-stream
-IV prefix; /V 5 /R 6 (PDF 2.0) uses AES-256-CBC with the file key directly
-plus the Algorithm 2.B hardened hash (which itself needs no-padding CBC
-encryption and ECB for /Perms). Tables are COMPUTED from the spec's
-definitions (GF(2^8) inverse + affine transform) rather than transcribed,
-and the implementation is pinned to the FIPS-197 Appendix C known-answer
-vectors (all three key sizes) in tests — an independent correctness
-anchor, like the LZW spec vector. Performance is irrelevant here
-(encrypted streams are a rare slice and a few KB each); clarity wins.
+Serves PDF encrypted streams (extraction/pdf_real.py) and their fixture
+writer. The AES-256 Algorithm 2.B hash runs ≥64 CBC passes of 2-5 KB: a
+pure-Python cipher spent about 1 s per document there, libcrypto a few ms.
+libcrypto is reached through the stdlib's ``_hashlib``, which has already
+mapped it: no third-party package, no ``ldconfig`` lookup, no added memory
+but the ctypes glue. Each call uses a fresh context; threads share nothing.
 """
 
 from __future__ import annotations
 
-# --- GF(2^8) arithmetic tables (generator 3) -------------------------------
-_EXP = [0] * 510
-_LOG = [0] * 256
-_x = 1
-for _i in range(255):
-    _EXP[_i] = _x
-    _LOG[_x] = _i
-    _x ^= ((_x << 1) ^ (0x1B if _x & 0x80 else 0)) & 0xFF  # x *= 3
-for _i in range(255, 510):
-    _EXP[_i] = _EXP[_i - 255]
+import _hashlib
+import ctypes
+
+_lib = ctypes.CDLL(_hashlib.__file__)
+_p, _s, _i = ctypes.c_void_p, ctypes.c_char_p, ctypes.c_int
 
 
-def _gmul(a: int, b: int) -> int:
-    if a == 0 or b == 0:
-        return 0
-    return _EXP[_LOG[a] + _LOG[b]]
+def _bind(name: str, restype, *argtypes):
+    fn = getattr(_lib, name)
+    fn.restype, fn.argtypes = restype, list(argtypes)
+    return fn
 
 
-# --- S-box: multiplicative inverse then the affine transform ---------------
-SBOX = bytearray(256)
-for _a in range(256):
-    _b = 0 if _a == 0 else _EXP[255 - _LOG[_a]]
-    _s = _b
-    for _ in range(4):
-        _b = ((_b << 1) | (_b >> 7)) & 0xFF
-        _s ^= _b
-    SBOX[_a] = _s ^ 0x63
-INV_SBOX = bytearray(256)
-for _i, _v in enumerate(SBOX):
-    INV_SBOX[_v] = _i
-
-_RCON = [0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36]
+_ctx_new = _bind("EVP_CIPHER_CTX_new", _p)
+_ctx_free = _bind("EVP_CIPHER_CTX_free", None, _p)
+_init = _bind("EVP_CipherInit_ex", _i, _p, _p, _p, _s, _s, _i)
+_set_padding = _bind("EVP_CIPHER_CTX_set_padding", _i, _p, _i)
+_update = _bind("EVP_CipherUpdate", _i, _p, _s, ctypes.POINTER(_i), _s, _i)
+_CIPHERS = {
+    (mode, n): _bind(f"EVP_aes_{n * 8}_{mode}", _p)()
+    for mode in ("cbc", "ecb")
+    for n in (16, 24, 32)
+}
 
 
-def expand_key(key: bytes) -> list[bytes]:
-    """16/24/32-byte key → Nr+1 round keys of 16 bytes (FIPS-197 §5.2;
-    Nk=4/6/8 → Nr=10/12/14; AES-256 adds the extra SubWord at
-    i ≡ 4 mod Nk)."""
-    nk = len(key) // 4
-    if len(key) not in (16, 24, 32):
-        raise ValueError("AES key must be 16, 24 or 32 bytes")
-    nr = nk + 6
-    words = [key[i : i + 4] for i in range(0, len(key), 4)]
-    for i in range(nk, 4 * (nr + 1)):
-        t = bytearray(words[i - 1])
-        if i % nk == 0:
-            t = t[1:] + t[:1]  # RotWord
-            t = bytearray(SBOX[b] for b in t)  # SubWord
-            t[0] ^= _RCON[i // nk - 1]
-        elif nk > 6 and i % nk == 4:
-            t = bytearray(SBOX[b] for b in t)  # AES-256 extra SubWord
-        words.append(bytes(a ^ b for a, b in zip(words[i - nk], t)))
-    return [b"".join(words[4 * r : 4 * r + 4]) for r in range(nr + 1)]
-
-
-def expand_key_128(key: bytes) -> list[bytes]:
-    """16-byte key → 11 round keys (legacy alias for the AESV2 path)."""
-    if len(key) != 16:
-        raise ValueError("AES-128 key must be 16 bytes")
-    return expand_key(key)
-
-
-def _shift_rows(s: bytearray, inverse: bool) -> bytearray:
-    # state is column-major: s[r + 4c]
-    out = bytearray(16)
-    for r in range(4):
-        for c in range(4):
-            src_c = (c + r) % 4 if not inverse else (c - r) % 4
-            out[r + 4 * c] = s[r + 4 * src_c]
-    return out
-
-
-def _mix_columns(s: bytearray, inverse: bool) -> bytearray:
-    m = (0x0E, 0x0B, 0x0D, 0x09) if inverse else (0x02, 0x03, 0x01, 0x01)
-    out = bytearray(16)
-    for c in range(4):
-        col = s[4 * c : 4 * c + 4]
-        for r in range(4):
-            out[r + 4 * c] = (
-                _gmul(m[(0 - r) % 4], col[0])
-                ^ _gmul(m[(1 - r) % 4], col[1])
-                ^ _gmul(m[(2 - r) % 4], col[2])
-                ^ _gmul(m[(3 - r) % 4], col[3])
-            )
-    return out
-
-
-# --- encryption T-tables -----------------------------------------------
-# The R6 hardened hash (Algorithm 2.B, pdf_real._hash_2b) runs ~10k block
-# encryptions per evaluation, so the encrypt direction gets the classic
-# T-table formulation: each table entry fuses SubBytes + the MixColumns
-# column contribution; ShiftRows becomes the byte-selection pattern.
-# COMPUTED from SBOX and the same GF(2^8) doubling as everything else —
-# still no transcribed constants. Decrypt stays in the readable
-# matrix form (it runs once per encrypted stream, not 10k times).
-_TE0 = [0] * 256
-for _i, _s in enumerate(SBOX):
-    _s2 = _gmul(_s, 2)
-    _TE0[_i] = (_s2 << 24) | (_s << 16) | (_s << 8) | (_s2 ^ _s)
-_TE1 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in _TE0]
-_TE2 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in _TE1]
-_TE3 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in _TE2]
-
-
-def _rk_words(round_keys: list[bytes]) -> list[list[int]]:
-    return [
-        [int.from_bytes(k[4 * j : 4 * j + 4], "big") for j in range(4)]
-        for k in round_keys
-    ]
-
-
-def _encrypt_words(rkw: list[list[int]], c: list[int]) -> list[int]:
-    nr = len(rkw) - 1
-    k0 = rkw[0]
-    c = [c[j] ^ k0[j] for j in range(4)]
-    for rnd in range(1, nr):
-        k = rkw[rnd]
-        c = [
-            _TE0[(c[j] >> 24) & 0xFF]
-            ^ _TE1[(c[(j + 1) & 3] >> 16) & 0xFF]
-            ^ _TE2[(c[(j + 2) & 3] >> 8) & 0xFF]
-            ^ _TE3[c[(j + 3) & 3] & 0xFF]
-            ^ k[j]
-            for j in range(4)
-        ]
-    k = rkw[nr]
-    return [
-        (
-            (SBOX[(c[j] >> 24) & 0xFF] << 24)
-            | (SBOX[(c[(j + 1) & 3] >> 16) & 0xFF] << 16)
-            | (SBOX[(c[(j + 2) & 3] >> 8) & 0xFF] << 8)
-            | SBOX[c[(j + 3) & 3] & 0xFF]
+def _crypt(mode: str, key: bytes, iv: bytes | None, data: bytes, enc: int) -> bytes:
+    """One unpadded AES pass over ``data`` (enc=1 encrypts, 0 decrypts)."""
+    cipher = _CIPHERS.get((mode, len(key)))
+    if cipher is None or (iv is not None and len(iv) != 16):
+        raise ValueError("AES needs a 16, 24 or 32-byte key and a 16-byte IV")
+    data = bytes(data)
+    out, n = ctypes.create_string_buffer(len(data) + 16), _i(0)
+    ctx = _ctx_new()
+    try:
+        ok = ctx and (
+            _init(ctx, cipher, None, bytes(key), iv and bytes(iv), enc)
+            and _set_padding(ctx, 0)
+            and _update(ctx, out, ctypes.byref(n), data, len(data))
         )
-        ^ k[j]
-        for j in range(4)
-    ]
-
-
-def encrypt_block(round_keys: list[bytes], block: bytes) -> bytes:
-    out = _encrypt_words(
-        _rk_words(round_keys),
-        [int.from_bytes(block[4 * j : 4 * j + 4], "big") for j in range(4)],
-    )
-    return b"".join(w.to_bytes(4, "big") for w in out)
-
-
-def encrypt_block_slow(round_keys: list[bytes], block: bytes) -> bytes:
-    """Direct FIPS-197 restatement (SubBytes/ShiftRows/MixColumns as
-    written in the spec) — the parity witness for the T-table path."""
-    nr = len(round_keys) - 1
-    s = bytearray(a ^ b for a, b in zip(block, round_keys[0]))
-    for rnd in range(1, nr):
-        s = bytearray(SBOX[b] for b in s)
-        s = _shift_rows(s, inverse=False)
-        s = _mix_columns(s, inverse=False)
-        s = bytearray(a ^ b for a, b in zip(s, round_keys[rnd]))
-    s = bytearray(SBOX[b] for b in s)
-    s = _shift_rows(s, inverse=False)
-    return bytes(a ^ b for a, b in zip(s, round_keys[nr]))
-
-
-def decrypt_block(round_keys: list[bytes], block: bytes) -> bytes:
-    nr = len(round_keys) - 1
-    s = bytearray(a ^ b for a, b in zip(block, round_keys[nr]))
-    s = _shift_rows(s, inverse=True)
-    s = bytearray(INV_SBOX[b] for b in s)
-    for rnd in range(nr - 1, 0, -1):
-        s = bytearray(a ^ b for a, b in zip(s, round_keys[rnd]))
-        s = _mix_columns(s, inverse=True)
-        s = _shift_rows(s, inverse=True)
-        s = bytearray(INV_SBOX[b] for b in s)
-    return bytes(a ^ b for a, b in zip(s, round_keys[0]))
+    finally:
+        _ctx_free(ctx)
+    if not ok:
+        raise ValueError("OpenSSL AES call failed")
+    return out.raw[: n.value]
 
 
 def cbc_decrypt(key: bytes, iv_and_data: bytes) -> bytes | None:
     """PDF AESV2/AESV3 layout: the 16-byte IV prefixes the ciphertext;
-    PKCS#7 padding stripped (tolerantly — malformed padding → None).
-    Key size selects AES-128 (/V 4) or AES-256 (/V 5)."""
+    PKCS#7 padding stripped tolerantly (malformed padding → None)."""
     if len(iv_and_data) < 32 or len(iv_and_data) % 16:
         return None
-    rk = expand_key(key)
-    iv = iv_and_data[:16]
-    out = bytearray()
-    prev = iv
-    for i in range(16, len(iv_and_data), 16):
-        block = iv_and_data[i : i + 16]
-        out += bytes(a ^ b for a, b in zip(decrypt_block(rk, block), prev))
-        prev = block
+    out = _crypt("cbc", key, iv_and_data[:16], iv_and_data[16:], 0)
     pad = out[-1]
     if not (1 <= pad <= 16) or out[-pad:] != bytes([pad]) * pad:
         return None
-    return bytes(out[:-pad])
-
-
-def _cbc_encrypt_core(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """Word-level CBC encrypt over a 16-byte-multiple payload (no IV
-    prefix, no padding) — the shared hot loop."""
-    rkw = _rk_words(expand_key(key))
-    prev = [int.from_bytes(iv[4 * j : 4 * j + 4], "big") for j in range(4)]
-    out = bytearray()
-    for i in range(0, len(data), 16):
-        c = [
-            int.from_bytes(data[i + 4 * j : i + 4 * j + 4], "big") ^ prev[j]
-            for j in range(4)
-        ]
-        prev = _encrypt_words(rkw, c)
-        for w in prev:
-            out += w.to_bytes(4, "big")
-    return bytes(out)
+    return out[:-pad]
 
 
 def cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """Fixture-side inverse: PKCS#7 pad, prefix the IV (PDF layout)."""
     pad = 16 - len(data) % 16
-    return iv + _cbc_encrypt_core(key, iv, data + bytes([pad]) * pad)
+    return iv + _crypt("cbc", key, iv, data + bytes([pad]) * pad, 1)
 
 
 def cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """CBC encrypt, NO padding, NO IV prefix — the Algorithm 2.B hash
-    step and the /UE //OE file-key wrap both use exact-multiple inputs."""
+    """CBC, no padding, no IV prefix: the Algorithm 2.B step and the
+    /UE //OE file-key wrap, both on exact 16-byte multiples."""
     if len(data) % 16:
         raise ValueError("nopad CBC needs a 16-byte multiple")
-    return _cbc_encrypt_core(key, iv, data)
+    return _crypt("cbc", key, iv, data, 1)
 
 
 def cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes | None:
-    """CBC decrypt, NO padding, NO IV prefix (inverse of the above)."""
+    """Inverse of ``cbc_encrypt_nopad``; None on a partial or empty input."""
     if len(data) % 16 or not data:
         return None
-    rk = expand_key(key)
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        block = data[i : i + 16]
-        out += bytes(a ^ b for a, b in zip(decrypt_block(rk, block), prev))
-        prev = block
-    return bytes(out)
+    return _crypt("cbc", key, iv, data, 0)
 
 
 def ecb_encrypt_block(key: bytes, block: bytes) -> bytes:
     """Single-block ECB — the /Perms entry of the V5 encrypt dict."""
-    return encrypt_block(expand_key(key), block)
+    return _crypt("ecb", key, None, block, 1)
 
 
 def ecb_decrypt_block(key: bytes, block: bytes) -> bytes:
-    return decrypt_block(expand_key(key), block)
+    return _crypt("ecb", key, None, block, 0)

@@ -25,10 +25,11 @@ security handler with an EMPTY user password is decrypted transparently
 /R 2-3), the crypt-filter era's AES-128-CBC (/V 4 /R 4 /AESV2,
 incl. /EncryptMetadata false key derivation), AND PDF 2.0's AES-256
 (/V 5 /R 6 /AESV3: Algorithm 2.B hardened hash, /UE file-key unwrap,
-/Perms ECB check — all via extraction/aes.py, FIPS-197-vector-pinned
-for every key size); the password proof (/U) is verified first, so a
-real-password document returns None instead of mojibake. Simple fonts
-without /ToUnicode decode through their /Encoding
+/Perms ECB check — all via extraction/aes.py, which runs OpenSSL's AES
+and is FIPS-197-vector-pinned for every key size); the password proof
+(/U) is verified first, so a real-password document returns None
+instead of mojibake. Simple fonts without /ToUnicode decode through
+their /Encoding
 (WinAnsi/MacRoman/Standard + /Differences, extraction/pdf_encodings.py);
 only fonts with neither fall back to latin-1. Remaining scope limits
 (documented, not silent): no DCT/CCITT/JBIG2/JPX image filters (pixel
@@ -597,8 +598,10 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     then ≥64 rounds of AES-128-CBC over (pwd+K+udata)*64 with the digest
     algorithm re-selected each round by E's first 16 bytes mod 3, until
     the last byte of E is ≤ rounds−32. Deliberately expensive (the spec
-    hardens it against brute force) → memoized, since validation and
-    key-unwrap recompute the same (password, salt, udata) triples."""
+    hardens it against brute force): a few ms per call on OpenSSL's AES.
+    Validation and key unwrap use different salts, so one document never
+    repeats a triple; the memo pays off only across documents that share
+    salts, as the fixture writer's fixed ones do."""
     import hashlib
 
     from deepseek_ocr_api_rs_spark.extraction.aes import cbc_encrypt_nopad

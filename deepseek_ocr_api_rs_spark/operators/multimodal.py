@@ -123,15 +123,6 @@ def decode_image_dims(payload: bytes | None) -> tuple[int, int, str] | None:
     return None
 
 
-def _fake_decode_dims(n_bytes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic fallback for payloads that are NOT recognized images
-    (text blobs in the driver tables): derives dims arithmetically from the
-    payload length so oracles can reproduce it."""
-    width = (n_bytes % 640 + 1).astype(np.int32)
-    height = (n_bytes % 480 + 1).astype(np.int32)
-    return width, height
-
-
 def _decode_dims_batch(
     payloads,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:

@@ -659,14 +659,21 @@ def read_wat_metadata(spark: SparkSession, path: str) -> DataFrame:
                 hm = env["Payload-Metadata"]["HTTP-Response-Metadata"][
                     "HTML-Metadata"
                 ]
-            except (ValueError, KeyError, UnicodeDecodeError):
+            except (ValueError, KeyError, TypeError):
+                continue  # not JSON, or a non-object on the envelope path
+            if not isinstance(hm, dict):
+                continue
+            head, links = hm.get("Head") or {}, hm.get("Links") or []
+            if not isinstance(head, dict) or not isinstance(links, list):
+                continue
+            title = head.get("Title")
+            if title is not None and not isinstance(title, str):
                 continue
             links = [
                 e["url"]
-                for e in hm.get("Links") or []
-                if isinstance(e, dict) and "url" in e
+                for e in links
+                if isinstance(e, dict) and isinstance(e.get("url"), str)
             ]
-            title = (hm.get("Head") or {}).get("Title")
             yield rec["url"], _date_key(rec["date"]), title, links
 
     rows = _scan_segments(

@@ -87,9 +87,10 @@ def test_wat_write_read_roundtrip(spark, tmp_path):
 
 
 def test_wat_reader_skips_foreign_and_malformed(spark, tmp_path):
-    """A conversion (WET) record in a .wat file and a metadata record
-    whose payload is not the envelope shape are both skipped — the
-    reader never crashes, never fabricates rows."""
+    """A conversion (WET) record in a .wat file and metadata records
+    whose payload is not the envelope shape — not JSON, a top-level
+    array, a string Envelope, a list-valued HTML-Metadata or Head — are
+    all skipped: the reader never crashes, never fabricates rows."""
     out = tmp_path / "wat"
     out.mkdir()
     good = make_wat_record_gz(
@@ -107,15 +108,28 @@ def test_wat_reader_skips_foreign_and_malformed(spark, tmp_path):
             "text": "hello",
         }
     )
-    bad_payload = b"this is not json"
-    bad_head = (
-        "WARC/1.0\r\n"
-        "WARC-Type: metadata\r\n"
-        "WARC-Target-URI: https://bad.org/p\r\n"
-        "WARC-Date: 2024-05-01T00:00:00Z\r\n"
-        f"Content-Length: {len(bad_payload)}\r\n\r\n"
-    ).encode("latin-1")
-    bad = gzip.compress(bad_head + bad_payload + b"\r\n\r\n")
+
+    def html_meta(value: object) -> bytes:
+        return json.dumps({"Envelope": {"Payload-Metadata": {
+            "HTTP-Response-Metadata": {"HTML-Metadata": value}}}}).encode()
+
+    bad_payloads = [
+        b"this is not json",
+        b"[1]",
+        b'{"Envelope": "x"}',
+        html_meta([{"Links": []}]),
+        html_meta({"Head": ["Title"], "Links": []}),
+    ]
+    bad = b""
+    for i, bad_payload in enumerate(bad_payloads):
+        bad_head = (
+            "WARC/1.0\r\n"
+            "WARC-Type: metadata\r\n"
+            f"WARC-Target-URI: https://bad.org/{i}\r\n"
+            "WARC-Date: 2024-05-01T00:00:00Z\r\n"
+            f"Content-Length: {len(bad_payload)}\r\n\r\n"
+        ).encode("latin-1")
+        bad += gzip.compress(bad_head + bad_payload + b"\r\n\r\n")
     (out / "part-00000.warc.wat.gz").write_bytes(good + stray_wet + bad)
     rows = read_wat_metadata(spark, str(out)).collect()
     assert [r.url for r in rows] == ["https://ok.org/p"]
