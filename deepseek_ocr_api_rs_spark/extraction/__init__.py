@@ -7,9 +7,11 @@ Rust-vs-Python golden-parity pattern, crates/infer-deepseek/tests/baseline.rs:47
 - ``batch.extract_batch``        — numpy-vectorized across an Arrow batch,
   what the Spark ``mapInPandas`` stage runs.
 
-Both share the low-level tokenizers (``html_blocks``, ``pdf_spans``) but
-implement feature scoring, accept smoothing and assembly independently; the
-tests assert byte-identical output text and exact-equal intermediate
+Both share the low-level tokenizers (``html_blocks``, ``pdf_spans``): the
+batch kernel reads the HTML segmenter's batch-wide block columns, the
+reference its per-document ``RawBlock`` list. They implement feature
+scoring, accept smoothing and assembly independently; the tests assert
+byte-identical output text and exact-equal intermediate
 features/scores/masks (tier-2 bisection, SURVEY.md §5).
 """
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from dataclasses import dataclass
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -23,7 +24,7 @@ import pandas as pd
 from deepseek_ocr_api_rs_spark.extraction import charset as CS
 from deepseek_ocr_api_rs_spark.extraction import features as FT
 from deepseek_ocr_api_rs_spark.extraction import markdown as MD
-from deepseek_ocr_api_rs_spark.extraction.html_blocks import RawBlock, segment_html
+from deepseek_ocr_api_rs_spark.extraction.html_blocks import segment_columns, text_counts
 from deepseek_ocr_api_rs_spark.extraction.normalize import normalize_text
 from deepseek_ocr_api_rs_spark.extraction.pdf_spans import (
     PDF_MAGIC,
@@ -37,53 +38,10 @@ class BlockPool:
     """All HTML blocks of a batch, flattened (struct-of-arrays)."""
 
     doc_idx: np.ndarray      # int64, which batch row each block belongs to
-    block_idx: np.ndarray    # int64, position within its document
     features: np.ndarray     # float64 (n_blocks, N_FEATURES)
     scores: np.ndarray       # float64 (n_blocks,)
-    raw_accept: np.ndarray   # bool
     accepted: np.ndarray     # bool (post-smoothing)
     texts: list[str]
-    tag_paths: list[str]
-
-
-def _pool_features(blocks: list[RawBlock], doc_of: np.ndarray) -> np.ndarray:
-    """Columnwise feature computation over the pooled block arrays.
-
-    Same numerators/denominators/division order as the scalar
-    ``reference.block_features`` — elementwise IEEE ops ⇒ bit-identical.
-    """
-    n = len(blocks)
-    feats = np.empty((n, FT.N_FEATURES), dtype=np.float64)
-    n_text = np.fromiter((b.n_text_chars for b in blocks), np.float64, n)
-    n_link = np.fromiter((b.n_link_chars for b in blocks), np.float64, n)
-    n_tags = np.fromiter((b.n_tags for b in blocks), np.float64, n)
-    n_words = np.fromiter((b.n_words for b in blocks), np.float64, n)
-    n_stop = np.fromiter((b.n_stop_words for b in blocks), np.float64, n)
-    n_punct = np.fromiter((b.n_punct for b in blocks), np.float64, n)
-    depth = np.fromiter((b.depth for b in blocks), np.float64, n)
-    boiler = np.fromiter((b.boiler for b in blocks), np.float64, n)
-    text_den = np.maximum(n_text, 1.0)
-    word_den = np.maximum(n_words, 1.0)
-    feats[:, 0] = np.log1p(n_text)
-    feats[:, 1] = n_link / text_den
-    feats[:, 2] = n_text / (1.0 + n_tags)
-    feats[:, 3] = n_stop / word_den
-    feats[:, 4] = n_punct / text_den
-    feats[:, 5] = n_text / word_den
-    feats[:, 6] = depth
-    feats[:, 7] = boiler
-    feats[:, 8] = np.fromiter((FT.tag_weight(b.tag_path) for b in blocks), np.float64, n)
-    # second feature view (E2): per-DOC global stats broadcast to each block
-    # row — bincount sums of integer-valued float64s are exact regardless of
-    # order, so this matches reference.doc_features bitwise
-    if n:
-        uniq, inv = np.unique(doc_of, return_inverse=True)
-        tot_text = np.bincount(inv, weights=n_text)
-        tot_link = np.bincount(inv, weights=n_link)
-        blocks_per_doc = np.bincount(inv).astype(np.float64)
-        feats[:, 9] = tot_link[inv] / np.maximum(tot_text[inv], 1.0)
-        feats[:, 10] = np.log1p(blocks_per_doc)[inv]
-    return feats
 
 
 def _smooth_accept_pooled(
@@ -121,33 +79,61 @@ def _smooth_accept_pooled(
 
 
 def pool_html_blocks(html_docs: list[tuple[int, str]]) -> BlockPool:
-    """Parse + pool all blocks for the html-branch docs of a batch."""
-    all_blocks: list[RawBlock] = []
-    doc_of_list: list[int] = []
-    for doc_i, html in html_docs:
-        blocks = segment_html(html)
-        all_blocks.extend(blocks)
-        doc_of_list.extend([doc_i] * len(blocks))
-    n = len(all_blocks)
-    doc_of = np.asarray(doc_of_list, dtype=np.int64)
-    feats = _pool_features(all_blocks, doc_of)
-    scores = FT.score_matrix(feats)
-    raw = scores > FT.ACCEPT_THRESHOLD
-    n_words = np.fromiter((b.n_words for b in all_blocks), np.float64, n)
-    boiler = np.fromiter((b.boiler for b in all_blocks), np.float64, n)
-    heading = np.fromiter(
-        (FT.leaf_tag(b.tag_path) in FT.HEADING_TAGS for b in all_blocks), bool, n
+    """Segment + pool all blocks for the html-branch docs of a batch, then
+    compute features columnwise over the pool.
+
+    Same numerators/denominators/division order as the scalar
+    ``reference.block_features`` — elementwise IEEE ops on exact
+    integer-valued float64s ⇒ bit-identical.
+    """
+    cols = segment_columns(html for _, html in html_docs)
+    texts = cols.texts
+    n = len(texts)
+    doc_of = np.repeat(
+        np.fromiter((doc_i for doc_i, _ in html_docs), np.int64, len(html_docs)),
+        cols.counts,
     )
-    accepted = _smooth_accept_pooled(raw, doc_of, n_words, boiler, heading)
+    n_words, n_stop, n_punct = (np.asarray(c, np.float64) for c in text_counts(texts))
+    n_text = np.fromiter(map(len, texts), np.float64, n)
+    n_link = np.minimum(np.asarray(cols.link_chars, np.float64), n_text)
+    n_tags = np.asarray(cols.n_tags, np.float64)
+    depth = np.fromiter(map(len, cols.paths), np.float64, n)
+    boiler = (np.asarray(cols.boiler, np.int64) > 0).astype(np.float64)
+    # stack entries never contain '/', so the last one is FT.leaf_tag's leaf
+    leaves = [path[-1] if path else "" for path in cols.paths]
+
+    feats = np.empty((n, FT.N_FEATURES), dtype=np.float64)
+    text_den = np.maximum(n_text, 1.0)
+    word_den = np.maximum(n_words, 1.0)
+    feats[:, 0] = np.log1p(n_text)
+    feats[:, 1] = n_link / text_den
+    feats[:, 2] = n_text / (1.0 + n_tags)
+    feats[:, 3] = n_stop / word_den
+    feats[:, 4] = n_punct / text_den
+    feats[:, 5] = n_text / word_den
+    feats[:, 6] = depth
+    feats[:, 7] = boiler
+    feats[:, 8] = np.fromiter(
+        map(FT.TAG_WEIGHTS.get, leaves, repeat(FT.DEFAULT_TAG_WEIGHT)), np.float64, n
+    )
+    # second feature view (E2): per-DOC global stats broadcast to each block
+    # row — bincount sums of integer-valued float64s are exact regardless of
+    # order, so this matches reference.doc_features bitwise
+    if n:
+        _, inv = np.unique(doc_of, return_inverse=True)
+        tot_text = np.bincount(inv, weights=n_text)
+        tot_link = np.bincount(inv, weights=n_link)
+        blocks_per_doc = np.bincount(inv).astype(np.float64)
+        feats[:, 9] = tot_link[inv] / np.maximum(tot_text[inv], 1.0)
+        feats[:, 10] = np.log1p(blocks_per_doc)[inv]
+
+    scores = FT.score_matrix(feats)
+    heading = np.fromiter(map(FT.HEADING_TAGS.__contains__, leaves), bool, n)
+    accepted = _smooth_accept_pooled(
+        scores > FT.ACCEPT_THRESHOLD, doc_of, n_words, boiler, heading
+    )
     return BlockPool(
-        doc_idx=doc_of,
-        block_idx=np.fromiter((b.idx for b in all_blocks), np.int64, n),
-        features=feats,
-        scores=scores,
-        raw_accept=raw,
-        accepted=accepted,
-        texts=[b.text for b in all_blocks],
-        tag_paths=[b.tag_path for b in all_blocks],
+        doc_idx=doc_of, features=feats, scores=scores, accepted=accepted, texts=texts
     )
 
 

@@ -1,4 +1,4 @@
-"""HTML → deterministic block list (the shared low-level tokenizer).
+"""HTML → deterministic block columns (the shared low-level tokenizer).
 
 Plays the role of the reference's image preprocessing + tiling
 (crates/infer-deepseek/src/vision/preprocess.rs:13-76 — deterministic
@@ -7,14 +7,20 @@ ordered list of text blocks with integer count features. Everything
 downstream (scoring, accept/reject, assembly) is pure arithmetic on these
 counts, implemented twice (scalar vs vectorized) and parity-checked.
 
-Two parse drivers feed ONE event sink (identical segmentation semantics):
+One segmenter, ``segment_columns``: a single loop over ``_TOKEN_RE``
+matches per document, with the segmentation state (open-tag stack,
+link/skip/boilerplate depths, block context) in local variables and each
+tag classified by one lookup in ``_TAG_FLAGS``. Blocks of every document
+are appended straight into batch-wide columns, and ``text_counts`` counts
+words, stopwords and punctuation over the whole text column afterwards.
+``segment_html`` is the per-document ``RawBlock`` view of the same loop,
+for the scalar reference extractor.
 
-- ``segment_html``        — fast single-pass regex tokenizer (default; the
-  production path — ~4× faster than stdlib HTMLParser);
-- ``segment_html_stdlib`` — stdlib ``html.parser`` driver, kept as the slow
-  cross-check path (the reference keeps ``generate_without_cache`` for
-  exactly this purpose — parity debugging, model/mod.rs:1684-1914). Tests
-  hold the two drivers block-identical over the fixture corpus.
+The tests hold this loop block-identical to the event-sink drivers it
+replaced, kept in ``tests/html_oracle.py`` with the stdlib
+``html.parser`` driver as the slow cross-check (the reference keeps
+``generate_without_cache`` for exactly this purpose — parity debugging,
+model/mod.rs:1684-1914).
 
 No lxml/bs4 in this environment; a hand-rolled walk is also the easiest
 thing to make byte-deterministic.
@@ -23,13 +29,15 @@ thing to make byte-deterministic.
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 from dataclasses import dataclass
 from html import unescape
-from html.parser import HTMLParser
+from itertools import repeat
+from typing import NamedTuple
 
 # Tags whose text content is never document text.
 _SKIP_CONTENT = frozenset({"script", "style", "noscript", "template", "svg", "head"})
-# Tags the tokenizers treat as raw text (scan straight to the close tag) —
+# Tags the tokenizer treats as raw text (scan straight to the close tag) —
 # must mirror stdlib HTMLParser.CDATA_CONTENT_ELEMENTS for driver parity.
 _RAWTEXT = frozenset({"script", "style"})
 # Opening or closing any of these flushes the current block.
@@ -49,6 +57,26 @@ _VOID = frozenset(
      "embed", "source", "track", "wbr"}
 )
 
+# Each tag's classes as bit flags, so the loop pays one dict lookup per tag.
+_F_BOUNDARY, _F_SKIP, _F_NO_PUSH, _F_BOILER, _F_RAWTEXT, _F_LINK = (
+    1, 2, 4, 8, 16, 32,
+)
+_TAG_FLAGS: dict[str, int] = {
+    tag: (
+        _F_BOUNDARY * (tag in _BLOCK_BOUNDARY)
+        | _F_SKIP * (tag in _SKIP_CONTENT)
+        | _F_NO_PUSH * (tag in _VOID or tag == "html")
+        | _F_BOILER * (tag in _BOILER_ANCESTORS)
+        | _F_RAWTEXT * (tag in _RAWTEXT)
+        | _F_LINK * (tag == "a")
+    )
+    for tag in _BLOCK_BOUNDARY | _SKIP_CONTENT | _VOID | {"html", "a"}
+}
+# Rawtext close search on the document itself, ASCII case-insensitive like
+# stdlib's set_cdata_mode: positions found in html.lower() would be off by
+# one for every character (e.g. 'İ') whose lowercase is two code points.
+_RAWTEXT_CLOSE = {tag: re.compile("</" + tag, re.I | re.A) for tag in _RAWTEXT}
+
 
 @dataclass
 class RawBlock:
@@ -65,7 +93,6 @@ class RawBlock:
     n_words: int
     n_stop_words: int
     n_punct: int
-    n_digits: int
 
 
 # Small multilingual stopword table — feature input only (its exact content
@@ -80,158 +107,39 @@ STOPWORDS = frozenset(
 
 _PUNCT = ".,;:!?\"'()[]{}-—…"
 _STRIP = "\".,;:!?()'"
-# C-speed counting: deletion translate tables (exactly equivalent to the
-# per-char membership loops they replaced; digits pinned to ASCII 0-9).
-_DEL_PUNCT = str.maketrans("", "", _PUNCT)
-_DEL_DIGITS = str.maketrans("", "", "0123456789")
+_PUNCT_RE = re.compile("[" + re.escape(_PUNCT) + "]")
 
 
-def _word_stats(text: str) -> tuple[int, int, int, int]:
-    words = text.split()
-    n_stop = 0
-    stops = STOPWORDS
-    for w in words:
-        # fast path: already-lowercase alpha words (the common case) need
-        # no strip/lower allocation — identical result by construction
-        if w.isalpha():
-            if (w if w.islower() else w.lower()) in stops:
-                n_stop += 1
-        elif w.strip(_STRIP).lower() in stops:
-            n_stop += 1
-    n_punct = len(text) - len(text.translate(_DEL_PUNCT))
-    n_digits = len(text) - len(text.translate(_DEL_DIGITS))
-    return len(words), n_stop, n_punct, n_digits
+def text_counts(texts: list[str]) -> tuple[list[int], list[int], list[int]]:
+    """Words, stopwords and punctuation characters of each block text.
+
+    Block text is whitespace-collapsed, so its words are exactly its
+    single-space-separated runs. A word is a stopword when, stripped of
+    ``_STRIP`` and lowercased, it is in ``STOPWORDS``; lowercasing the
+    whole text first gives the same words (no lowercase mapping makes a
+    space or a ``_STRIP`` character, and no stopword holds a sigma, the one
+    letter whose lowercase depends on its neighbours).
+    """
+    is_stop, strip = STOPWORDS.__contains__, str.strip
+    n_words = [t.count(" ") + 1 for t in texts]
+    n_stop = [
+        sum(map(is_stop, map(strip, t.lower().split(), repeat(_STRIP))))
+        for t in texts
+    ]
+    n_punct = [len(_PUNCT_RE.findall(t)) for t in texts]
+    return n_words, n_stop, n_punct
 
 
-class _BlockSink:
-    """Parser-independent event sink holding the segmentation state
-    machine. Both drivers emit (starttag, endtag, startendtag, data) events
-    into this; the resulting block list is driver-invariant (tested)."""
+class BlockColumns(NamedTuple):
+    """The blocks of a sequence of documents, in (document, block) order."""
 
-    __slots__ = (
-        "stack", "blocks", "_parts", "_link_chars", "_tags_in_block",
-        "_link_depth", "_skip_depth", "_boiler_depth",
-        "_ctx_stack", "_ctx_boiler", "_stack_cache", "_open_counts",
-    )
+    counts: list[int]                # blocks per document
+    texts: list[str]                 # whitespace-collapsed block text
+    paths: list[tuple[str, ...]]     # open-tag stack at block start
+    link_chars: list[int]            # chars inside <a> (not capped at len(text))
+    n_tags: list[int]                # tag opens inside the block
+    boiler: list[int]                # open _BOILER_ANCESTORS at block start
 
-    def __init__(self) -> None:
-        self.stack: list[str] = []
-        self.blocks: list[RawBlock] = []
-        self._parts: list[str] = []
-        self._link_chars = 0
-        self._tags_in_block = 0
-        self._link_depth = 0
-        self._skip_depth = 0
-        self._boiler_depth = 0
-        self._ctx_stack: tuple[str, ...] = ()
-        self._ctx_boiler = 0
-        # hot-path accelerators (pure caches — every observable value is
-        # still derived from `stack` exactly as before):
-        # memoized tuple(stack), invalidated on push/pop
-        self._stack_cache: tuple[str, ...] | None = ()
-        # multiset of open tags so endtag's `tag in stack` test is O(1)
-        self._open_counts: dict[str, int] = {}
-
-    # -- block lifecycle -------------------------------------------------
-    def _begin_block_context(self) -> None:
-        # O(1) snapshot; the (rarer) flush pays the join/any cost instead
-        t = self._stack_cache
-        if t is None:
-            t = self._stack_cache = tuple(self.stack)
-        self._ctx_stack = t
-        self._ctx_boiler = self._boiler_depth
-
-    def _flush(self) -> None:
-        if not self._parts:  # empty block: skip the join/split entirely
-            self._link_chars = 0
-            self._tags_in_block = 0
-            self._begin_block_context()
-            return
-        text = " ".join("".join(self._parts).split())
-        if text:
-            n_words, n_stop, n_punct, n_digits = _word_stats(text)
-            self.blocks.append(
-                RawBlock(
-                    idx=len(self.blocks),
-                    tag_path="/".join(self._ctx_stack),
-                    text=text,
-                    n_text_chars=len(text),
-                    n_link_chars=min(self._link_chars, len(text)),
-                    n_tags=self._tags_in_block,
-                    depth=len(self._ctx_stack),
-                    boiler=int(self._ctx_boiler > 0),
-                    n_words=n_words,
-                    n_stop_words=n_stop,
-                    n_punct=n_punct,
-                    n_digits=n_digits,
-                )
-            )
-        self._parts = []
-        self._link_chars = 0
-        self._tags_in_block = 0
-        self._begin_block_context()
-
-    # -- events ------------------------------------------------------
-    def starttag(self, tag: str) -> None:
-        if tag in _BLOCK_BOUNDARY:
-            self._flush()
-        if tag in _SKIP_CONTENT:
-            self._skip_depth += 1
-        if tag == "a":
-            self._link_depth += 1
-        self._tags_in_block += 1
-        if tag not in _VOID and tag != "html":
-            self.stack.append(tag)
-            self._stack_cache = None
-            counts = self._open_counts
-            counts[tag] = counts.get(tag, 0) + 1
-            if tag in _BOILER_ANCESTORS:
-                self._boiler_depth += 1
-        if tag in _BLOCK_BOUNDARY:
-            self._begin_block_context()
-
-    def endtag(self, tag: str) -> None:
-        if tag in _BLOCK_BOUNDARY:
-            self._flush()
-        if tag == "a" and self._link_depth > 0:
-            self._link_depth -= 1
-        if tag in _SKIP_CONTENT and self._skip_depth > 0:
-            self._skip_depth -= 1
-        # pop to the innermost matching open tag (forgiving, deterministic;
-        # the open-tag multiset makes the membership test O(1))
-        counts = self._open_counts
-        if counts.get(tag, 0):
-            self._stack_cache = None
-            while self.stack:
-                popped = self.stack.pop()
-                counts[popped] -= 1
-                if popped in _BOILER_ANCESTORS:
-                    self._boiler_depth -= 1
-                if popped == tag:
-                    break
-        if tag in _BLOCK_BOUNDARY:
-            self._begin_block_context()
-
-    def startendtag(self, tag: str) -> None:
-        if tag in _BLOCK_BOUNDARY:
-            self._flush()
-            self._begin_block_context()
-        self._tags_in_block += 1
-
-    def data(self, data: str) -> None:
-        if self._skip_depth:
-            return
-        self._parts.append(data)
-        if self._link_depth:
-            self._link_chars += len(" ".join(data.split()))
-
-    def finish(self) -> list[RawBlock]:
-        self._flush()
-        return self.blocks
-
-
-# ---------------------------------------------------------------------------
-# Driver 1 (default): single-pass regex tokenizer — the production path.
 
 _TOKEN_RE = re.compile(
     r"<!--.*?(?:-->|$)"                       # comments
@@ -242,84 +150,159 @@ _TOKEN_RE = re.compile(
     r"|</\s*([a-zA-Z][^\s>\x00]*)[^>]*>"       # end tag        -> group 1
     r"|<([a-zA-Z][^\s/>\x00]*)"                # start tag name -> group 2
     # (name charset mirrors stdlib HTMLParser's tagfind: anything up to
-    # whitespace / '/' / '>', so `<a;>` names the tag "a;" in both drivers)
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)"       # attrs (quote-aware)
-    r"(/?)>",                                  # self-close     -> group 4
+    # whitespace / '/' / '>', so `<a;>` names the tag "a;" in both drivers;
+    # the greedy attribute group takes a self-closing '/', so `<div/>`
+    # opens a div)
+    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)>",     # attrs (quote-aware)
     re.DOTALL,
 )
 
 
-def segment_html(html: str) -> list[RawBlock]:
-    """Parse one HTML document into its ordered block list (fast driver)."""
-    sink = _BlockSink()
-    lower = html.lower()
-    pos = 0
-    n = len(html)
-    while pos < n:
-        m = _TOKEN_RE.search(html, pos)
-        if m is None:
-            tail = html[pos:]
-            if tail:
-                sink.data(unescape(tail) if "&" in tail else tail)
-            break
-        if m.start() > pos:
-            seg = html[pos : m.start()]
-            sink.data(unescape(seg) if "&" in seg else seg)
-        end_name, start_name, _attrs, selfclose = m.group(1, 2, 3, 4)
-        pos = m.end()
-        if start_name is not None:
-            tag = start_name.lower()
-            if selfclose:
-                sink.startendtag(tag)
-            else:
-                sink.starttag(tag)
-                if tag in _RAWTEXT:
-                    # rawtext scan to the matching close (mirrors stdlib
-                    # CDATA_CONTENT_ELEMENTS handling; content discarded
-                    # by the sink's skip_depth anyway)
-                    close = lower.find("</" + tag, pos)
-                    if close == -1:
-                        sink.endtag(tag)
+def segment_columns(htmls: Iterable[str]) -> BlockColumns:
+    """Segment each HTML document into blocks, appended to one set of
+    columns."""
+    counts: list[int] = []
+    texts: list[str] = []
+    paths: list[tuple[str, ...]] = []
+    links: list[int] = []
+    n_tags: list[int] = []
+    boilers: list[int] = []
+    add_text, add_path, add_link = texts.append, paths.append, links.append
+    add_tags, add_boiler = n_tags.append, boilers.append
+    flags_of = _TAG_FLAGS.get
+    finditer = _TOKEN_RE.finditer
+    for html in htmls:
+        n_before = len(texts)
+        stack: list[str] = []
+        open_counts: dict[str, int] = {}  # multiset of `stack`
+        parts: list[str] = []             # data of the current block
+        link_chars = tags = 0             # of the current block
+        link_depth = skip_depth = boiler_depth = 0
+        ctx: tuple[str, ...] = ()         # stack at the last boundary tag
+        ctx_boiler = 0
+        frozen: tuple[str, ...] | None = ()  # tuple(stack), None once stale
+        pos = 0
+        scanning = True
+        while scanning:
+            scanning = False
+            for m in finditer(html, pos):
+                start = m.start()
+                if start > pos and not skip_depth:
+                    seg = html[pos:start]
+                    if "&" in seg:
+                        seg = unescape(seg)
+                    parts.append(seg)
+                    if link_depth:
+                        link_chars += len(" ".join(seg.split()))
+                pos = m.end()
+                # the last group that took part: 3 (attrs) for a start
+                # tag, 1 for an end tag, none for comments/doctypes/PIs
+                last = m.lastindex
+                if last == 3:
+                    tag = m[2].lower()
+                elif last == 1:
+                    tag = m[1].lower()
+                else:
+                    continue
+                f = flags_of(tag, 0)
+                if f & _F_BOUNDARY:
+                    if parts:
+                        text = " ".join("".join(parts).split())
+                        if text:
+                            add_text(text)
+                            add_path(ctx)
+                            add_link(link_chars)
+                            add_tags(tags)
+                            add_boiler(ctx_boiler)
+                        parts = []
+                    link_chars = tags = 0
+                if last == 3:
+                    if f & _F_SKIP:
+                        skip_depth += 1
+                    if f & _F_LINK:
+                        link_depth += 1
+                    tags += 1
+                    if not f & _F_NO_PUSH:
+                        stack.append(tag)
+                        frozen = None
+                        open_counts[tag] = open_counts.get(tag, 0) + 1
+                        if f & _F_BOILER:
+                            boiler_depth += 1
+                    if f & _F_RAWTEXT:
+                        # skip the raw text and its close tag, then close
+                        # the element (it is on top of the stack)
+                        stack.pop()
+                        open_counts[tag] -= 1
+                        skip_depth -= 1
+                        close = _RAWTEXT_CLOSE[tag].search(html, pos)
+                        if close is None:
+                            break
+                        gt = html.find(">", close.start())
+                        pos = gt + 1 if gt != -1 else len(html)
+                        scanning = True
                         break
-                    gt = html.find(">", close)
-                    pos = (gt + 1) if gt != -1 else n
-                    sink.endtag(tag)
-        elif end_name is not None:
-            sink.endtag(end_name.lower())
-        # else: comment/doctype/PI — consumed silently
-    return sink.finish()
+                else:
+                    if f & _F_LINK and link_depth:
+                        link_depth -= 1
+                    if f & _F_SKIP and skip_depth:
+                        skip_depth -= 1
+                    # pop to the innermost matching open tag (forgiving,
+                    # deterministic)
+                    if open_counts.get(tag):
+                        frozen = None
+                        while True:
+                            popped = stack.pop()
+                            open_counts[popped] -= 1
+                            if popped in _BOILER_ANCESTORS:
+                                boiler_depth -= 1
+                            if popped == tag:
+                                break
+                if f & _F_BOUNDARY:
+                    # a run of boundary tags that leave the stack alone
+                    # (e.g. <br>) shares one snapshot, so a deep stack
+                    # costs O(depth) once, not once per tag
+                    if frozen is None:
+                        frozen = tuple(stack)
+                    ctx = frozen
+                    ctx_boiler = boiler_depth
+            else:
+                if pos < len(html) and not skip_depth:
+                    seg = html[pos:]
+                    if "&" in seg:
+                        seg = unescape(seg)
+                    parts.append(seg)
+                    if link_depth:
+                        link_chars += len(" ".join(seg.split()))
+        if parts:
+            text = " ".join("".join(parts).split())
+            if text:
+                add_text(text)
+                add_path(ctx)
+                add_link(link_chars)
+                add_tags(tags)
+                add_boiler(ctx_boiler)
+        counts.append(len(texts) - n_before)
+    return BlockColumns(counts, texts, paths, links, n_tags, boilers)
 
 
-# ---------------------------------------------------------------------------
-# Driver 2: stdlib html.parser — slow cross-check path (D2 pattern).
-
-class _StdlibAdapter(HTMLParser):
-    def __init__(self, sink: _BlockSink) -> None:
-        super().__init__(convert_charrefs=True)
-        self.sink = sink
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        self.sink.starttag(tag)
-
-    def handle_endtag(self, tag: str) -> None:
-        self.sink.endtag(tag)
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        self.sink.startendtag(tag)
-
-    def handle_data(self, data: str) -> None:
-        self.sink.data(data)
-
-
-def segment_html_stdlib(html: str) -> list[RawBlock]:
-    """Stdlib-parser driver — used only by parity tests."""
-    sink = _BlockSink()
-    parser = _StdlibAdapter(sink)
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        # Truncated/hostile input: keep whatever was segmented before the
-        # failure (deterministic — parser state depends only on the prefix).
-        pass
-    return sink.finish()
+def segment_html(html: str) -> list[RawBlock]:
+    """Parse one HTML document into its ordered block list."""
+    _, texts, paths, links, n_tags, boilers = segment_columns((html,))
+    return [
+        RawBlock(
+            idx=idx,
+            tag_path="/".join(path),
+            text=text,
+            n_text_chars=len(text),
+            n_link_chars=min(link, len(text)),
+            n_tags=tags,
+            depth=len(path),
+            boiler=int(boiler > 0),
+            n_words=words,
+            n_stop_words=stop,
+            n_punct=punct,
+        )
+        for idx, (text, path, link, tags, boiler, words, stop, punct) in enumerate(
+            zip(texts, paths, links, n_tags, boilers, *text_counts(texts))
+        )
+    ]

@@ -59,23 +59,30 @@ def _extract_payloads(docs: list[dict], recipe_name: str = DEFAULT_RECIPE) -> li
         except Exception:
             payloads.append(None)
     out = extract_batch(payloads)
+    # one .tolist() per column: plain Python str/int/bool values, without a
+    # pandas scalar lookup per cell
+    branch, text, n_chars, n_total, n_acc, truncated = (
+        out[c].tolist()
+        for c in (
+            "branch", "extracted_text", "n_chars", "n_blocks_total",
+            "n_blocks_accepted", "truncated",
+        )
+    )
     rows = []
     for i, d in enumerate(docs):
         url = d.get("url", f"doc_{i}")
         rows.append(
             {
                 "url": url,
-                "branch": out.branch[i],
-                "extracted_text": render_frame(
-                    recipe, out.extracted_text[i], url
-                ),
+                "branch": branch[i],
+                "extracted_text": render_frame(recipe, text[i], url),
                 # usage counts the KERNEL output (pre-framing) — the
                 # reference's usage counters likewise count generated
                 # tokens, not template text (routes.rs:205-227)
-                "n_chars": int(out.n_chars[i]),
-                "n_blocks_total": int(out.n_blocks_total[i]),
-                "n_blocks_accepted": int(out.n_blocks_accepted[i]),
-                "truncated": bool(out.truncated[i]),
+                "n_chars": n_chars[i],
+                "n_blocks_total": n_total[i],
+                "n_blocks_accepted": n_acc[i],
+                "truncated": truncated[i],
             }
         )
     return rows

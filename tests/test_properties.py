@@ -6,11 +6,10 @@ from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
 
+from html_oracle import segment_html_stdlib
+
 from deepseek_ocr_api_rs_spark.extraction.batch import extract_batch
-from deepseek_ocr_api_rs_spark.extraction.html_blocks import (
-    segment_html,
-    segment_html_stdlib,
-)
+from deepseek_ocr_api_rs_spark.extraction.html_blocks import segment_html
 from deepseek_ocr_api_rs_spark.extraction.normalize import normalize_text
 from deepseek_ocr_api_rs_spark.extraction.reference import extract_document
 
