@@ -6413,7 +6413,7 @@ def _synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship extraction operator itself (mapInPandas over Arrow
+    """The flagship extraction operator itself (mapInArrow over Arrow
     batches, boilerplate strip + spans + branch routing) over pages
     synthesized from the driver table. Not SQL-expressible (the block
     scorer + smoothing is the engine's own model) → rows-only driver

@@ -161,7 +161,7 @@ def _python_worker_cpu_seconds() -> float:
 
 def run_extraction_bench(spark, n_docs: int) -> tuple[float, int]:
     """Returns (seconds, docs) for the full extraction job: read parquet →
-    salted url-hash repartition → mapInPandas extraction → write parquet."""
+    salted url-hash repartition → mapInArrow extraction → write parquet."""
     from deepseek_ocr_api_rs_spark.operators.extract import extract_documents
     from deepseek_ocr_api_rs_spark.operators.partitioning import repartition_by_url
 

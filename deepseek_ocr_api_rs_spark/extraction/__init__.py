@@ -4,8 +4,10 @@ Two parity-checked implementations of the same math (the reference repo's
 Rust-vs-Python golden-parity pattern, crates/infer-deepseek/tests/baseline.rs:479-708):
 
 - ``reference.extract_document`` — scalar, single-process, the golden oracle.
-- ``batch.extract_batch``        — numpy-vectorized across an Arrow batch,
-  what the Spark ``mapInPandas`` stage runs.
+- ``batch.extract_columns``      — numpy-vectorized across an Arrow batch,
+  what the Spark ``mapInArrow`` stage and the server run; it returns
+  plain columns, and ``batch.extract_batch`` is the same result as a
+  pandas DataFrame.
 
 Both share the low-level tokenizers (``html_blocks``, ``pdf_spans``): the
 batch kernel reads the HTML segmenter's batch-wide block columns, the

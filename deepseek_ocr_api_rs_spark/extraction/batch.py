@@ -8,6 +8,10 @@ flat numpy arrays, features and scores are computed columnwise over the
 whole pool, the accept-smoothing pass is shifted-boolean-array logic, and
 only parsing + final string assembly stay scalar (like lxml would be).
 
+The result is plain columns (``extract_columns``): the Spark ``mapInArrow``
+stage and the server read them directly, so neither imports pandas;
+``extract_batch`` wraps them in a pandas DataFrame.
+
 Bit-identical to ``reference.extract_document`` per document — enforced by
 tests (the Rust-vs-Python golden parity pattern, tests/baseline.rs:479-708).
 """
@@ -17,9 +21,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass
 from itertools import repeat
+from typing import TYPE_CHECKING, NamedTuple
 
 import numpy as np
-import pandas as pd
 
 from deepseek_ocr_api_rs_spark.extraction import charset as CS
 from deepseek_ocr_api_rs_spark.extraction import features as FT
@@ -31,6 +35,9 @@ from deepseek_ocr_api_rs_spark.extraction.pdf_spans import (
     assemble_pdf_text,
     parse_pdf_payload,
 )
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 
 @dataclass
@@ -152,8 +159,24 @@ def _join_blocks(blocks: list[str]) -> tuple[str, list[int], list[int]]:
     return FT.BLOCK_SEPARATOR.join(blocks), starts, ends
 
 
-def extract_batch(payloads: Sequence[bytes | None]) -> pd.DataFrame:
-    """Extract a batch of raw documents → doc-level pandas DataFrame.
+class ExtractColumns(NamedTuple):
+    """The kernel's doc-level output, one entry per payload: plain Python
+    lists for the strings and span lists, numpy arrays for the counts and
+    the truncation flag. Field order is the output columns' order in
+    ``operators.extract.EXTRACT_OUTPUT_SCHEMA``."""
+
+    branch: list[str]
+    extracted_text: list[str]
+    n_chars: np.ndarray  # int64
+    n_blocks_total: np.ndarray  # int64
+    n_blocks_accepted: np.ndarray  # int64
+    span_starts: list[list[int]]
+    span_ends: list[list[int]]
+    truncated: np.ndarray  # bool
+
+
+def extract_columns(payloads: Sequence[bytes | None]) -> ExtractColumns:
+    """Extract a batch of raw documents → doc-level columns.
 
     Routing (MoE-dispatch pattern D8: group rows by branch, process each
     branch, scatter results back by original index —
@@ -232,15 +255,28 @@ def extract_batch(payloads: Sequence[bytes | None]) -> pd.DataFrame:
             if doc_i not in pooled_docs:
                 branch[doc_i] = "html"
 
-    return pd.DataFrame(
-        {
-            "extracted_text": texts,
-            "branch": branch,
-            "n_chars": np.fromiter((len(t) for t in texts), np.int64, n),
-            "n_blocks_total": n_total,
-            "n_blocks_accepted": n_acc,
-            "span_starts": span_starts,
-            "span_ends": span_ends,
-            "truncated": truncated,
-        }
+    return ExtractColumns(
+        branch=branch,
+        extracted_text=texts,
+        n_chars=np.fromiter(map(len, texts), np.int64, n),
+        n_blocks_total=n_total,
+        n_blocks_accepted=n_acc,
+        span_starts=span_starts,
+        span_ends=span_ends,
+        truncated=truncated,
     )
+
+
+_FRAME_ORDER = (
+    "extracted_text", "branch", "n_chars", "n_blocks_total",
+    "n_blocks_accepted", "span_starts", "span_ends", "truncated",
+)
+
+
+def extract_batch(payloads: Sequence[bytes | None]) -> pd.DataFrame:
+    """``extract_columns`` as a pandas DataFrame (for tests and notebooks;
+    the Spark stage and the server read the columns directly)."""
+    import pandas as pd
+
+    cols = extract_columns(payloads)
+    return pd.DataFrame({name: getattr(cols, name) for name in _FRAME_ORDER})

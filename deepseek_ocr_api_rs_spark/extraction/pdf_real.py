@@ -47,13 +47,18 @@ is proven against more than its own classic writer.
 from __future__ import annotations
 
 import re
+import sys
 import zlib
 
 DEFAULT_PAGE_WIDTH = 612.0
 DEFAULT_PAGE_HEIGHT = 792.0
 CHAR_WIDTH_EM = 0.5  # estimated average glyph advance, in units of font size
 
-_OBJ_HEAD_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+# (?<!\d) here and on _INT_OBJ_RE: a head never starts inside a number.
+# Without it a search over a run of digits retried every suffix of the
+# run (quadratic); with it only the run's first digit is tried. Both
+# scans resume only after a non-digit, so they find the same matches.
+_OBJ_HEAD_RE = re.compile(rb"(?<!\d)(\d+)\s+(\d+)\s+obj\b")
 _OBJ_AT_RE = re.compile(rb"\s*(\d+)\s+(\d+)\s+obj\b")
 _STREAM_START_RE = re.compile(rb"stream(?:\r\n|\n|\r)")
 # direct /Length: the integer must be followed by the next dict token
@@ -61,7 +66,7 @@ _STREAM_START_RE = re.compile(rb"stream(?:\r\n|\n|\r)")
 # a bare negative lookahead backtracks into matching a digit prefix.
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)\s*[/>]")
 _LENGTH_INDIRECT_RE = re.compile(rb"/Length\s+(\d+)\s+\d+\s+R")
-_INT_OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\s*(\d+)\s*endobj")
+_INT_OBJ_RE = re.compile(rb"(?<!\d)(\d+)\s+\d+\s+obj\s*(\d+)\s*endobj")
 _KIDS_RE = re.compile(rb"/Kids\s*\[([^\]]*)\]")
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 _MEDIABOX_RE = re.compile(rb"/MediaBox\s*\[([^\]]*)\]")
@@ -120,8 +125,50 @@ def _resolve_length(head: bytes, int_objs: dict[int, int] | None) -> int | None:
     return None
 
 
+class _Cursor:
+    """``find(pos)`` — the start of the first hit at or after ``pos``, or
+    −1 — remembered across calls. No hit starts between the last searched
+    position and its hit, so a query in that range reuses the hit: a scan
+    whose positions only grow reads each byte once."""
+
+    __slots__ = ("_find", "_lo", "_hit")
+
+    def __init__(self, find) -> None:
+        self._find = find
+        self._lo = sys.maxsize
+        self._hit = -1
+
+    def __call__(self, pos: int) -> int:
+        if pos < self._lo or 0 <= self._hit < pos:
+            self._lo, self._hit = pos, self._find(pos)
+        return self._hit
+
+
+class _ObjectScan:
+    """Forward cursors over one file's bytes for ``_parse_object_at``: the
+    next ``endobj``, the next stream keyword and the next ``endstream``.
+    Shared across the heads of ``_extract_objects``, they keep its scan
+    linear; searching to the end of the data afresh for each head that has
+    no ``endobj`` after it made a run of bare heads quadratic."""
+
+    __slots__ = ("endobj", "stream", "endstream")
+
+    def __init__(self, data: bytes) -> None:
+        self.endobj = _Cursor(lambda pos: data.find(b"endobj", pos))
+        self.endstream = _Cursor(lambda pos: data.find(b"endstream", pos))
+
+        def stream(pos: int) -> int:
+            m = _STREAM_START_RE.search(data, pos)
+            return -1 if m is None else m.start()
+
+        self.stream = _Cursor(stream)
+
+
 def _parse_object_at(
-    data: bytes, pos: int, int_objs: dict[int, int] | None
+    data: bytes,
+    pos: int,
+    int_objs: dict[int, int] | None,
+    scan: _ObjectScan | None = None,
 ) -> tuple[int, bytes, bytes | None, int] | None:
     """Parse one ``N G obj ... endobj`` starting at ``pos`` (leading
     whitespace allowed) → (num, head, stream|None, end_pos), or None.
@@ -133,11 +180,18 @@ def _parse_object_at(
     m = _OBJ_AT_RE.match(data, pos)
     if m is None:
         return None
+    if scan is None:
+        scan = _ObjectScan(data)
     num = int(m.group(1))
     body_start = m.end()
-    endobj = data.find(b"endobj", body_start)
-    sm = _STREAM_START_RE.search(
-        data, body_start, endobj if endobj >= 0 else len(data)
+    endobj = scan.endobj(body_start)
+    # the first stream keyword from body_start, kept only if it ends
+    # before the endobj (the search bounded there finds the same match)
+    s = scan.stream(body_start)
+    sm = (
+        _STREAM_START_RE.match(data, s, endobj if endobj >= 0 else len(data))
+        if s >= 0
+        else None
     )
     if sm is None:
         if endobj < 0:
@@ -148,11 +202,11 @@ def _parse_object_at(
     if length is not None and length >= 0:
         start = sm.end()
         stream = data[start : start + length]
-        end = data.find(b"endobj", start + length)
+        end = scan.endobj(start + length)
         return (num, head, stream, end + 6 if end >= 0 else len(data))
-    es = data.find(b"endstream", sm.end())
+    es = scan.endstream(sm.end())
     stream = data[sm.end() : es if es >= 0 else len(data)].rstrip(b"\r\n")
-    end = data.find(b"endobj", es if es >= 0 else sm.end())
+    end = scan.endobj(es if es >= 0 else sm.end())
     return (num, head, stream, end + 6 if end >= 0 else len(data))
 
 
@@ -164,12 +218,13 @@ def _extract_objects(
     incremental-update convention); xref-resolved objects override this
     scan entirely in parse_real_pdf."""
     objs: dict[int, tuple[bytes, bytes | None]] = {}
+    scan = _ObjectScan(data)
     pos = 0
     while True:
         m = _OBJ_HEAD_RE.search(data, pos)
         if m is None:
             break
-        parsed = _parse_object_at(data, m.start(), int_objs)
+        parsed = _parse_object_at(data, m.start(), int_objs, scan)
         if parsed is None:
             pos = m.end()
             continue

@@ -1,9 +1,10 @@
 """The Spark extraction stage: documents table → extracted-text table.
 
-One ``mapInPandas`` stage over Arrow record batches (mandated by
-BASELINE.json input_hint: vectorized pandas/Arrow UDFs, no per-row Python).
-Inside each batch the work is the pooled numpy kernel
-(``extraction.batch.extract_batch``); across batches Spark's task
+One ``mapInArrow`` stage over Arrow record batches (BASELINE.json
+input_hint: vectorized pandas/Arrow UDFs, no per-row Python): each input
+batch becomes one output ``RecordBatch``, with no pandas leg on either
+side. Inside each batch the work is the pooled numpy kernel
+(``extraction.batch.extract_columns``); across batches Spark's task
 parallelism replaces the reference's rayon fan-out
 (crates/infer-deepseek/src/model/mod.rs:704-745 — and per SURVEY §2.3 E8 we
 do NOT nest thread pools inside the UDF).
@@ -24,10 +25,10 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -38,7 +39,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from deepseek_ocr_api_rs_spark.extraction.batch import extract_batch
+from deepseek_ocr_api_rs_spark.extraction.batch import extract_columns
 
 EXTRACT_OUTPUT_SCHEMA = StructType(
     [
@@ -58,23 +59,21 @@ EXTRACT_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = extract_batch(list(pdf["html"]))
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].values,
-                "warc_ts": pdf["warc_ts"].values,
-                "lang": pdf["lang"].values,
-                "branch": out["branch"].values,
-                "extracted_text": out["extracted_text"].values,
-                "n_chars": out["n_chars"].values,
-                "n_blocks_total": out["n_blocks_total"].values,
-                "n_blocks_accepted": out["n_blocks_accepted"].values,
-                "span_starts": out["span_starts"].values,
-                "span_ends": out["span_ends"].values,
-                "truncated": out["truncated"].values,
-            }
+_PASSTHROUGH = ("url", "warc_ts", "lang")
+_KERNEL_TYPES = [f.type for f in to_arrow_schema(EXTRACT_OUTPUT_SCHEMA)][len(_PASSTHROUGH):]
+
+
+def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """One output batch per input batch. ``url``, ``warc_ts`` and ``lang``
+    are the input's Arrow arrays as they came (no pandas leg, so no
+    timestamp is coerced to nanoseconds); the rest are the kernel's
+    columns, typed as ``EXTRACT_OUTPUT_SCHEMA``."""
+    for batch in batches:
+        out = extract_columns(batch.column("html").to_pylist())
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(c) for c in _PASSTHROUGH]
+            + [pa.array(col, t) for col, t in zip(out, _KERNEL_TYPES)],
+            names=EXTRACT_OUTPUT_SCHEMA.names,
         )
 
 
@@ -88,7 +87,7 @@ def extract_documents(docs: DataFrame) -> DataFrame:
     non-target rows before the expensive stage).
     """
     cols = ["url", "warc_ts", "html", "lang"]
-    return docs.select(*cols).mapInPandas(_extract_batches, schema=EXTRACT_OUTPUT_SCHEMA)
+    return docs.select(*cols).mapInArrow(_extract_batches, schema=EXTRACT_OUTPUT_SCHEMA)
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

@@ -5,7 +5,8 @@ What we assert per operator family (SURVEY.md §4):
 - scans: PushedFilters carries our predicates; ReadSchema is pruned;
 - joins: small dims resolve to BroadcastHashJoin, facts to one exchange;
 - aggregations: partial_ (map-side combine) before the exchange;
-- UDF stages: exactly one ArrowEvalPython/MapInPandas, no Python in filters.
+- UDF stages: exactly one ArrowEvalPython/MapInPandas/MapInArrow, no Python
+  in filters.
 """
 
 from __future__ import annotations

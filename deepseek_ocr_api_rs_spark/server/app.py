@@ -4,10 +4,12 @@ SSE streaming stream.rs). A reference user who POSTs documents and reads
 back text (+ usage counters, + SSE deltas) can do the same here.
 
 Transport only — the engine is the same extraction kernel the Spark path
-runs (`extraction.batch.extract_batch`); a server request is a batch of
-size N, exactly like one Arrow batch. stdlib http.server (no Rocket/flask
-in this container), threaded like the reference's one-request-at-a-time
-model lock (state.rs:24) generalized to a thread pool.
+runs (`extraction.batch.extract_columns`, read as plain columns, so the
+process imports neither pandas nor pyarrow); a server request is a batch
+of size N, exactly like one Arrow batch. stdlib http.server (no
+Rocket/flask in this container), threaded like the reference's
+one-request-at-a-time model lock (state.rs:24) generalized to a thread
+pool.
 
 Endpoints:
 - GET  /health                 → {"status": "ok"}
@@ -28,7 +30,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from deepseek_ocr_api_rs_spark import __version__
-from deepseek_ocr_api_rs_spark.extraction.batch import extract_batch
+from deepseek_ocr_api_rs_spark.extraction.batch import extract_columns
 from deepseek_ocr_api_rs_spark.extraction.recipes import (
     DEFAULT_RECIPE,
     get_recipe,
@@ -58,15 +60,12 @@ def _extract_payloads(docs: list[dict], recipe_name: str = DEFAULT_RECIPE) -> li
             payloads.append(base64.b64decode(raw, validate=True) if raw else None)
         except Exception:
             payloads.append(None)
-    out = extract_batch(payloads)
-    # one .tolist() per column: plain Python str/int/bool values, without a
-    # pandas scalar lookup per cell
-    branch, text, n_chars, n_total, n_acc, truncated = (
-        out[c].tolist()
-        for c in (
-            "branch", "extracted_text", "n_chars", "n_blocks_total",
-            "n_blocks_accepted", "truncated",
-        )
+    out = extract_columns(payloads)
+    # ndarray.tolist(): plain Python int/bool values for the JSON encoder
+    branch, text = out.branch, out.extracted_text
+    n_chars, n_total, n_acc, truncated = (
+        c.tolist()
+        for c in (out.n_chars, out.n_blocks_total, out.n_blocks_accepted, out.truncated)
     )
     rows = []
     for i, d in enumerate(docs):

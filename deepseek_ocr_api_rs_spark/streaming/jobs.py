@@ -4,7 +4,7 @@ The reference streams decoded deltas over SSE (crates/server/src/stream.rs)
 — transport streaming of a per-request computation. The Spark-native
 restatement is corpus-level: documents/events arrive continuously, the
 engine maintains watermarked windowed aggregates and can run the extraction
-stage itself on a stream (readStream → mapInPandas → writeStream).
+stage itself on a stream (readStream → mapInArrow → writeStream).
 
 Batch-equivalence: with Trigger.AvailableNow over static input, the final
 result of a streaming aggregation equals the batch group-by — which is what

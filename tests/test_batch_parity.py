@@ -13,7 +13,11 @@ from __future__ import annotations
 import numpy as np
 
 from deepseek_ocr_api_rs_spark.extraction import charset as CS
-from deepseek_ocr_api_rs_spark.extraction.batch import extract_batch, pool_html_blocks
+from deepseek_ocr_api_rs_spark.extraction.batch import (
+    extract_batch,
+    extract_columns,
+    pool_html_blocks,
+)
 from deepseek_ocr_api_rs_spark.extraction.reference import extract_document
 
 
@@ -102,3 +106,22 @@ def test_batch_split_invariance(corpus_pdf):
     parts = [extract_batch(payloads[i : i + 7]) for i in range(0, 60, 7)]
     stitched = np.concatenate([p.extracted_text.values for p in parts])
     assert list(whole.extracted_text.values) == list(stitched)
+
+
+def test_columns_equal_the_dataframe_view():
+    """``extract_columns`` is the kernel; ``extract_batch`` only wraps it.
+    Column for column (values and dtypes) on 400 seed-999 pages."""
+    from deepseek_ocr_api_rs_spark.fixtures.corpus import make_documents
+
+    payloads = list(make_documents(400, start_id=1_000_000 + (999 % 400) * 100_000).html)
+    cols = extract_columns(payloads)
+    frame = extract_batch(payloads)
+    assert sorted(frame.columns) == sorted(cols._fields)
+    for name in cols._fields:
+        col = getattr(cols, name)
+        assert len(col) == 400, name
+        if isinstance(col, np.ndarray):
+            assert frame[name].dtype == col.dtype, name
+            np.testing.assert_array_equal(frame[name].to_numpy(), col, err_msg=name)
+        else:
+            assert frame[name].tolist() == col, name

@@ -98,6 +98,7 @@ def test_read_plan_is_pure_jvm(spark, tmp_path):
         "BatchEvalPython",
         "ArrowEvalPython",
         "MapInPandas",
+        "MapInArrow",
         "FlatMapGroupsInPandas",
     ):
         assert marker not in plan, plan[:2000]

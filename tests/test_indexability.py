@@ -85,6 +85,7 @@ def test_plan_is_pure_jvm(spark):
         "BatchEvalPython",
         "ArrowEvalPython",
         "MapInPandas",
+        "MapInArrow",
         "FlatMapGroupsInPandas",
     ):
         assert marker not in plan, plan[:2000]

@@ -97,7 +97,7 @@ def test_outline_and_anchor_plans_are_pure_jvm(spark):
     for name in ("q_html_outline", "q_anchor_text"):
         df = entrymod.queries()[name](spark, SF)
         plan = physical_plan(df)
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                        "FlatMapGroupsInPandas"):
             assert marker not in plan, (name, plan[:2000])
 
@@ -137,7 +137,7 @@ def test_tables_plan_is_pure_jvm(spark):
 
     df = entrymod.queries()["q_html_tables"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
 
@@ -172,7 +172,7 @@ def test_assets_plan_is_pure_jvm(spark):
 
     df = entrymod.queries()["q_page_assets"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
 
@@ -206,6 +206,6 @@ def test_img_captions_plan_is_pure_jvm(spark):
 
     df = entrymod.queries()["q_img_captions"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]

@@ -67,7 +67,7 @@ def test_extraction_is_map_only_after_repartition(spark, corpus_path):
     docs = spark.read.parquet(corpus_path)
     df = extract_documents(repartition_by_url(docs, 8))
     assert count_exchanges(df) == 1, physical_plan(df)
-    assert physical_plan(df).count("MapInPandas") == 1
+    assert physical_plan(df).count("MapInArrow") == 1
 
 
 def test_simhash_fast_partial_aggregation(spark):
@@ -306,7 +306,7 @@ def test_html_links_plan_is_pure_jvm(spark):
 
     df = entrymod.queries()["q_html_links"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
     assert "Generate explode" in plan or "Generate" in plan  # the explode
@@ -322,7 +322,7 @@ def test_jsonld_and_og_meta_plans_are_pure_jvm(spark):
     for name in ("q_jsonld", "q_og_meta"):
         df = entrymod.queries()[name](spark, SF)
         plan = physical_plan(df)
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                        "FlatMapGroupsInPandas"):
             assert marker not in plan, (name, plan[:2000])
         assert "Generate" in plan, name  # the explode
@@ -337,7 +337,7 @@ def test_url_frontier_probe_is_broadcast_pure_jvm(spark):
 
     df = entrymod.queries()["q_url_frontier"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
     assert "BroadcastHashJoin" in plan, plan[:2000]
@@ -350,7 +350,7 @@ def test_line_dedup_plan_is_pure_jvm_with_broadcasts(spark):
     broadcast joins — the big line table never shuffles for them."""
     df = entrymod.queries()["q_line_dedup"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -364,7 +364,7 @@ def test_crawl_traps_plan_is_pure_jvm_single_agg(spark):
     Python, no window, map-side partial aggregate present."""
     df = entrymod.queries()["q_crawl_traps"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
     assert "Window" not in plan
@@ -377,7 +377,7 @@ def test_zorder_plan_is_pure_jvm(spark):
     file-assignment device."""
     df = entrymod.queries()["q_zorder_layout"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
 
@@ -389,7 +389,7 @@ def test_cdc_chunks_plan_is_pure_jvm(spark):
     map-side partial."""
     df = entrymod.queries()["q_cdc_chunks"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
     assert has_partial_aggregate(df)
@@ -404,7 +404,7 @@ def test_phrase_search_plan_is_pure_jvm_with_broadcast_phrase(spark):
     Python evaluation operator in the plan."""
     df = entrymod.queries()["q_phrase_search"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
     assert "Broadcast" in plan
@@ -419,7 +419,7 @@ def test_containment_plan_is_pure_jvm(spark):
     intersection agg."""
     df = entrymod.queries()["q_containment"](spark, SF)
     plan = physical_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
     assert has_partial_aggregate(df)
@@ -435,7 +435,7 @@ def test_quantile_sketch_uses_take_ordered(spark):
     df = entrymod.queries()["q_quantile_sketch"](spark, SF)
     plan = physical_plan(df)
     assert "TakeOrdered" in plan, plan[:2000]
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
                    "FlatMapGroupsInPandas"):
         assert marker not in plan, plan[:2000]
 

@@ -123,7 +123,8 @@ def test_robots_plan_is_jvm_and_broadcast(spark):
     )
     out = robots_allowed(rules, df, "trainingbot")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                   "MapInArrow"):
         assert marker not in plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 

@@ -1,9 +1,10 @@
-"""End-to-end Spark-path parity: parquet → mapInPandas extraction → byte-
+"""End-to-end Spark-path parity: parquet → mapInArrow extraction → byte-
 identical to persisted goldens (tier 1 — the contract of BASELINE.json
 input_hint: 'byte-identical extracted text per url')."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
@@ -74,6 +75,32 @@ def test_metrics_rollup(extracted):
     assert rows["text"].n_docs > 0
     assert rows["text"].block_accept_rate == 1.0
     assert rows["error"].total_chars == 0
+
+
+def test_warc_ts_outside_nanosecond_range_passes_through(spark):
+    """``warc_ts`` rides through the stage as the input's Arrow column.
+    Stamps outside pandas' nanosecond range (1677-2262), the largest
+    stamp Spark holds, and a null all extract in one batch, and each
+    comes out equal to the input."""
+    utc = dt.timezone.utc
+    stamps = [
+        dt.datetime(1600, 1, 1, tzinfo=utc),
+        dt.datetime(2300, 1, 1, tzinfo=utc),
+        dt.datetime(9999, 12, 31, 23, 59, 59, 999999, tzinfo=utc),
+        None,
+    ]
+    page = b"<html><body><p>A paragraph of ordinary words for the scorer.</p></body></html>"
+    docs = spark.createDataFrame(
+        [(f"u{i}", ts, page, "", "en") for i, ts in enumerate(stamps)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    ).coalesce(1)
+    got = {r.url: r for r in extract_documents(docs).collect()}
+    want = {r.url: r.warc_ts for r in docs.select("url", "warc_ts").collect()}
+    assert sorted(got) == sorted(want) == [f"u{i}" for i in range(len(stamps))]
+    for url, ts in want.items():
+        assert got[url].warc_ts == ts, url
+        assert got[url].branch == "html" and got[url].n_chars > 0, url
+    assert [want[f"u{i}"] is None for i in range(len(stamps))] == [False] * 3 + [True]
 
 
 def test_golden_blocks_concat_invariant(spark):
