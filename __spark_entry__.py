@@ -3483,8 +3483,7 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing, not part of the measured read path."""
     import datetime as _dt
 
-    import pandas as pd
-
+    from deepseek_ocr_api_rs_spark.sources.sink import SEGMENT_MANIFEST, segment_sink
     from deepseek_ocr_api_rs_spark.sources.warc import (
         make_warc_gz,
         read_warc_documents,
@@ -3493,65 +3492,46 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_shipped(spark)
     warc_dir = _staging_dir("warc_ingest_")
     n_parts = _fanout_parts(spark)
-    docs = _t(spark, sf_dir, "documents").select("doc_id").repartition(
-        n_parts, "doc_id"
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = docs.repartition(n_parts, "doc_id").sortWithinPartitions("doc_id")
     epoch = _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
 
-    def stage(batches):
-        import os as _os
-        import uuid as _uuid
+    def encode(d: int) -> bytes:
+        body = f"<html><body><p>doc {d} café body</p></body></html>"
+        charset = "iso-8859-1" if d % 5 == 0 else "utf-8"
+        recs = [{
+            "type": "response",
+            "url": f"https://warc.example.org/doc/{d}",
+            "date": epoch + _dt.timedelta(seconds=d),
+            "payload": body.encode(charset),
+            "content_type": f"text/html; charset={charset}",
+            "chunked": d % 3 == 0,
+        }]
+        if d % 25 == 0:  # decoy: dropped by the mime gate
+            recs.append({
+                "type": "response",
+                "url": f"https://warc.example.org/img/{d}",
+                "date": epoch, "payload": b"\x89PNG fake",
+                "content_type": "image/png",
+            })
+        recs.append({  # decoy: dropped by the record-type gate
+            "type": "request",
+            "url": f"https://warc.example.org/doc/{d}",
+            "date": epoch, "payload": b"GET / HTTP/1.1\r\n\r\n",
+        })
+        if d % 7 == 0:  # decoy: revisit dedup record (bare HTTP
+            # headers, no body) — must never surface as a document
+            recs.append({
+                "type": "revisit",
+                "url": f"https://warc.example.org/doc/{d}",
+                "date": epoch,
+            })
+        return make_warc_gz(recs)
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            recs = []
-            for d in sorted(int(x) for x in pdf["doc_id"]):
-                body = f"<html><body><p>doc {d} café body</p></body></html>"
-                charset = "iso-8859-1" if d % 5 == 0 else "utf-8"
-                recs.append({
-                    "type": "response",
-                    "url": f"https://warc.example.org/doc/{d}",
-                    "date": epoch + _dt.timedelta(seconds=d),
-                    "payload": body.encode(charset),
-                    "content_type": f"text/html; charset={charset}",
-                    "chunked": d % 3 == 0,
-                })
-                if d % 25 == 0:  # decoy: dropped by the mime gate
-                    recs.append({
-                        "type": "response",
-                        "url": f"https://warc.example.org/img/{d}",
-                        "date": epoch, "payload": b"\x89PNG fake",
-                        "content_type": "image/png",
-                    })
-                recs.append({  # decoy: dropped by the record-type gate
-                    "type": "request",
-                    "url": f"https://warc.example.org/doc/{d}",
-                    "date": epoch, "payload": b"GET / HTTP/1.1\r\n\r\n",
-                })
-                if d % 7 == 0:  # decoy: revisit dedup record (bare HTTP
-                    # headers, no body) — must never surface as a document
-                    recs.append({
-                        "type": "revisit",
-                        "url": f"https://warc.example.org/doc/{d}",
-                        "date": epoch,
-                    })
-            # deterministic name per (disjoint) doc_id batch + atomic
-            # replace: a retried or speculative task attempt rewrites the
-            # SAME file instead of adding a duplicate segment
-            name = _os.path.join(
-                warc_dir,
-                f"seg-{min(int(x) for x in pdf['doc_id']):010d}.warc.gz",
-            )
-            # tmp name deliberately contains no ".warc" so the reader's
-            # pathGlobFilter can never pick up a half-written file
-            tmp = _os.path.join(warc_dir, f".tmp-{_uuid.uuid4().hex}")
-            with open(tmp, "wb") as f:
-                f.write(make_warc_gz(recs))
-            _os.replace(tmp, name)
-            yield pd.DataFrame({"n": [len(recs)]})
-
-    docs.mapInPandas(stage, "n long").agg(F.sum("n")).first()  # staging barrier
+    # one segment per task through the shared sink: a retried or
+    # speculative attempt rewrites the SAME file instead of adding one
+    sink = segment_sink(warc_dir, "seg-{:05d}.warc.gz", encode)
+    docs.mapInArrow(sink, SEGMENT_MANIFEST).collect()  # staging barrier
     return (
         read_warc_documents(spark, warc_dir)
         .select(
@@ -3589,6 +3569,7 @@ def q_warc_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fidelity at once."""
     import datetime as _dt
 
+    from deepseek_ocr_api_rs_spark.sources.sink import SEGMENT_MANIFEST, segment_sink
     from deepseek_ocr_api_rs_spark.sources.warc import (
         fetch_warc_records_at,
         index_warc_segments,
@@ -3598,47 +3579,24 @@ def q_warc_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_shipped(spark)
     warc_dir = _staging_dir("warc_lookup_")
     n_parts = _fanout_parts(spark)
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(n_parts, "doc_id")
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = docs.repartition(n_parts, "doc_id").sortWithinPartitions("doc_id")
     epoch = _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
 
-    def stage(batches):
-        import os as _os
-        import uuid as _uuid
+    def encode(d: int, text: str | None) -> bytes:
+        return make_warc_gz([{
+            "type": "response",
+            "url": f"https://warc.example.org/doc/{d}",
+            "date": epoch + _dt.timedelta(seconds=d),
+            "payload": (text or "").encode("utf-8"),
+            "content_type": "text/html; charset=utf-8",
+        }])
 
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            recs = []
-            for d, text in sorted(
-                zip((int(x) for x in pdf["doc_id"]), pdf["text"])
-            ):
-                recs.append({
-                    "type": "response",
-                    "url": f"https://warc.example.org/doc/{d}",
-                    "date": epoch + _dt.timedelta(seconds=d),
-                    "payload": (text or "").encode("utf-8"),
-                    "content_type": "text/html; charset=utf-8",
-                })
-            # task-identity segment name + tmp/atomic-replace (the WET/WAT
-            # sink contract): a retried attempt rewrites the SAME file
-            name = _os.path.join(
-                warc_dir,
-                f"seg-{min(int(x) for x in pdf['doc_id']):010d}.warc.gz",
-            )
-            tmp = _os.path.join(warc_dir, f".tmp-{_uuid.uuid4().hex}")
-            with open(tmp, "wb") as f:
-                f.write(make_warc_gz(recs))
-            _os.replace(tmp, name)
-            yield pd.DataFrame({"file": [name], "n": [len(recs)]})
-
-    staged = docs.mapInPandas(stage, schema="file string, n long").collect()
-    assert sum(m.n for m in staged) > 0  # staging barrier
+    # one segment per task through the shared sink (the WET/WAT contract):
+    # a retried attempt rewrites the SAME file
+    sink = segment_sink(warc_dir, "seg-{:05d}.warc.gz", encode)
+    staged = docs.mapInArrow(sink, SEGMENT_MANIFEST).collect()
+    assert sum(m.n_records for m in staged) > 0  # staging barrier
 
     idx = index_warc_segments(spark, warc_dir)
     wanted = (

@@ -9,8 +9,8 @@
 
 Config precedence mirrors the reference (CLI > env > defaults,
 crates/config/src/config.rs:296-324): argparse flags > SPARK_GRAFT_* env >
-conf.py defaults. The job is resumable: re-running after a kill redoes only
-the uncommitted buckets (operators.checkpoint).
+conf.py defaults. The job is resumable: each task publishes its own bucket,
+and a rerun redoes only the uncommitted ones (operators.checkpoint).
 """
 
 from __future__ import annotations
@@ -32,8 +32,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         "--n-buckets",
         type=int,
         default=8,
-        help="url-hash buckets: both the commit unit of a resumable run and "
-        "the extraction's task count; a resume must use the same value",
+        help="url-hash buckets: the task count and the commit unit (a kill "
+        "loses only buckets in flight); a resume must use the same value",
     )
     p.add_argument("--run-id", default=None)
     p.add_argument("--master", default=None)
@@ -74,9 +74,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
     from deepseek_ocr_api_rs_spark.conf import build_session
-    from deepseek_ocr_api_rs_spark.operators.checkpoint import (
-        run_resumable_extraction,
-    )
+    from deepseek_ocr_api_rs_spark.operators import checkpoint
     from deepseek_ocr_api_rs_spark.operators.extract import extraction_metrics
     from deepseek_ocr_api_rs_spark.sources.io import read_documents
 
@@ -92,7 +90,7 @@ def main(argv: list[str] | None = None) -> int:
         docs = docs.filter(F.col("lang").isin(args.langs.split(",")))
     run_id = args.run_id or f"run-{int(time.time())}"
     t0 = time.time()
-    n_buckets_done = run_resumable_extraction(
+    n_buckets_done = checkpoint.run_resumable_extraction(
         spark,
         docs,
         args.output,
@@ -101,8 +99,9 @@ def main(argv: list[str] | None = None) -> int:
         run_id=run_id,
     )
     dt = time.time() - t0
+    # each task counted the rows it wrote into its bucket's manifest row
+    n = sum(checkpoint.read_manifest(args.checkpoint_dir).column("n_docs").to_pylist())
     out = spark.read.parquet(args.output)
-    n = out.count()
     print(
         f"extraction complete: {n} docs, {n_buckets_done} buckets this run, "
         f"{dt:.1f}s ({n / max(dt, 1e-9):.0f} docs/sec)"

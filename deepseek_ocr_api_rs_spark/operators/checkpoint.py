@@ -10,40 +10,42 @@ crates/core/src/cache.rs:78-116, applied to partitions instead of tokens):
 - one Spark plan does a run's work: scan the input once, drop committed
   buckets, route each row to the task of its bucket with one bucket-aligned
   exchange (``repartitionById``, Spark >= 4.1: task *k* holds exactly
-  bucket *k*), extract, and write once with ``partitionBy("bucket")`` into
-  ``<output>/_staging`` (Spark's reader skips ``_``-prefixed directories,
-  so readers of the output never see it);
-- the driver then commits the staged buckets in sorted order with no Spark
-  job: it renames ``_staging/bucket=<k>`` to ``bucket=<k>`` and appends one
-  manifest row ``(bucket, run_id, n_docs, n_chars, n_blocks_accepted,
-  committed_ts, n_buckets)`` to ``_checkpoints``. The row's metrics are read
-  from the bucket's parquet files, so they are exact under task retry;
+  bucket *k*), and run one ``mapInArrow`` stage;
+- the task of each bucket still to do extracts it and commits it itself
+  (``commit_bucket``, through ``sources.sink``): first
+  ``bucket=<k>/part-<k>.parquet``, then its manifest row ``(bucket,
+  run_id, n_docs, n_chars, n_blocks_accepted, committed_ts, n_buckets)``
+  as ``_checkpoints/part-<k>.parquet``. Both names are fixed by the
+  bucket, so a retried attempt replaces them, and the row counts the rows
+  the task wrote. A bucket with no rows gets a row with ``n_docs = 0`` and
+  no data file;
 - resume drops the input rows of buckets that have a manifest row, so a
   killed run redoes only uncommitted buckets. A resume must use the
   ``n_buckets`` the manifest was written with: under another modulus the
   same bucket ids name other urls.
 
-A bucket is either committed (its manifest row exists, appended after the
-rename) or will be redone; redoing a bucket first removes whatever a killed
-run left under its directory. A kill during the one write loses every
-bucket of that run; a kill during the commits loses only the uncommitted
-ones. Commits rename files on the driver, so ``output_dir`` and
-``checkpoint_dir`` must be driver-visible local paths, as
-``sources.snapshots`` already assumes for its commits.
+A kill loses only the buckets in flight: their redo replaces what they
+left. ``output_dir`` and ``checkpoint_dir`` must be visible to the
+executors, as for the WARC sinks.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
-import shutil
 import time
-import uuid
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from deepseek_ocr_api_rs_spark.operators.extract import _extract_batches
+from deepseek_ocr_api_rs_spark.sources.sink import attempt_file, publish, task_attempt
 
 MANIFEST_SCHEMA = pa.schema(
     [
@@ -56,8 +58,6 @@ MANIFEST_SCHEMA = pa.schema(
         ("n_buckets", pa.int32()),
     ]
 )
-
-STAGING = "_staging"
 
 
 def with_bucket(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFrame:
@@ -97,33 +97,53 @@ def _check_n_buckets(checkpoint_dir: str, n_buckets: int) -> None:
 
 
 def commit_bucket(
-    output_dir: str, checkpoint_dir: str, bucket: int, run_id: str, n_buckets: int
-) -> None:
-    """Move ``_staging/bucket=<k>`` into the output and append its manifest
-    row. The row file is written under a dot-name and renamed into place,
-    so no reader sees a partial row."""
-    name = f"bucket={bucket}"
-    staged = os.path.join(output_dir, STAGING, name)
-    stats = pq.read_table(staged, columns=["n_chars", "n_blocks_accepted"])
-    final = os.path.join(output_dir, name)
-    if os.path.exists(final):
-        shutil.rmtree(final)
-    os.replace(staged, final)
-    row = {
-        "bucket": bucket,
-        "run_id": run_id,
-        "n_docs": stats.num_rows,
-        "n_chars": pc.sum(stats["n_chars"]).as_py() or 0,
-        "n_blocks_accepted": pc.sum(stats["n_blocks_accepted"]).as_py() or 0,
-        "committed_ts": time.time(),
-        "n_buckets": n_buckets,
-    }
-    path = manifest_path(checkpoint_dir)
-    os.makedirs(path, exist_ok=True)
-    fname = f"part-{bucket:05d}-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, "." + fname)
-    pq.write_table(pa.Table.from_pylist([row], schema=MANIFEST_SCHEMA), tmp)
-    os.replace(tmp, os.path.join(path, fname))
+    output_dir: str,
+    checkpoint_dir: str,
+    bucket: int,
+    batches: Iterable[pa.RecordBatch],
+    run_id: str,
+    n_buckets: int,
+    killed: bool = False,
+) -> dict | None:
+    """Publish the extracted ``batches`` of ``bucket`` as its data file,
+    then its manifest row, and return the row. ``killed`` stops after the
+    tmp data file is written, as a kill would (for tests)."""
+    bucket_dir = os.path.join(output_dir, f"bucket={bucket}")
+    segment = f"part-{bucket:05d}.parquet"
+    row = dict(bucket=bucket, run_id=run_id, n_docs=0, n_chars=0, n_blocks_accepted=0)
+    with attempt_file(bucket_dir, segment) as tmp, contextlib.ExitStack() as stack:
+        writer = None
+        for batch in batches:
+            if writer is None:
+                os.makedirs(bucket_dir, exist_ok=True)
+                writer = stack.enter_context(pq.ParquetWriter(tmp, batch.schema))
+            writer.write_batch(batch)
+            row["n_docs"] += batch.num_rows
+            for col in ("n_chars", "n_blocks_accepted"):
+                row[col] += pc.sum(batch.column(col)).as_py() or 0
+        stack.close()
+        if killed:
+            return None
+        if writer is not None:
+            publish(tmp, bucket_dir, segment)
+    row.update(committed_ts=time.time(), n_buckets=n_buckets)
+    mdir = manifest_path(checkpoint_dir)
+    os.makedirs(mdir, exist_ok=True)
+    with attempt_file(mdir, segment) as tmp:
+        pq.write_table(pa.Table.from_pylist([row], schema=MANIFEST_SCHEMA), tmp)
+        publish(tmp, mdir, segment)
+    return row
+
+
+def _bucket_task(batches, todo, survivors, **commit) -> Iterator[pa.RecordBatch]:
+    """The task of one bucket: extract and commit it if it is to do. Tasks
+    of buckets outside ``survivors`` are killed before they publish."""
+    bucket = task_attempt()[0]
+    if bucket in todo:
+        batches = _extract_batches(batches)
+        row = commit_bucket(bucket=bucket, batches=batches, killed=bucket not in survivors, **commit)
+        if row is not None:
+            yield pa.RecordBatch.from_pylist([row], schema=MANIFEST_SCHEMA)
 
 
 def resume_filter(
@@ -150,27 +170,29 @@ def run_resumable_extraction(
     run_id: str = "run",
     fail_after_buckets: int | None = None,
 ) -> int:
-    """Extract every uncommitted bucket in one plan, then commit them one by
-    one; returns #buckets committed this run. ``n_buckets`` is both the
-    commit unit and the extraction's task count. ``fail_after_buckets``
-    stops the commits early, as a kill would (for tests)."""
-    from deepseek_ocr_api_rs_spark.operators.extract import extract_documents
-
+    """Extract and commit every uncommitted bucket in one plan; returns
+    #buckets committed this run. ``n_buckets`` is both the commit unit and
+    the extraction's task count. ``fail_after_buckets`` kills the tasks of
+    all but the first that many buckets still to do before they publish,
+    as a kill of the job would (for tests)."""
     _check_n_buckets(checkpoint_dir, n_buckets)
-    if committed_buckets(spark, checkpoint_dir) >= set(range(n_buckets)):
+    todo = sorted(set(range(n_buckets)) - committed_buckets(spark, checkpoint_dir))
+    if not todo:
         return 0  # nothing left to do: start no Spark job
-    todo = resume_filter(with_bucket(docs, n_buckets), spark, checkpoint_dir)
-    extracted = extract_documents(todo.repartitionById(n_buckets, "bucket"))
-    staging = os.path.join(output_dir, STAGING)
-    with_bucket(extracted, n_buckets).write.partitionBy("bucket").mode(
-        "overwrite"
-    ).parquet(staging)
-    staged = sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(staging) if d.startswith("bucket=")
+    task = functools.partial(
+        _bucket_task,
+        output_dir=output_dir,
+        checkpoint_dir=checkpoint_dir,
+        todo=frozenset(todo),
+        survivors=frozenset(todo[:fail_after_buckets]),
+        run_id=run_id,
+        n_buckets=n_buckets,
     )
-    for done, bucket in enumerate(staged, 1):
-        commit_bucket(output_dir, checkpoint_dir, bucket, run_id, n_buckets)
-        if fail_after_buckets is not None and done >= fail_after_buckets:
-            return done
-    shutil.rmtree(staging)
-    return len(staged)
+    bucketed = resume_filter(with_bucket(docs, n_buckets), spark, checkpoint_dir)
+    rows = (
+        bucketed.repartitionById(n_buckets, "bucket")
+        .select("url", "warc_ts", "html", "lang")
+        .mapInArrow(task, schema=from_arrow_schema(MANIFEST_SCHEMA))
+        .collect()
+    )
+    return len(rows)

@@ -11,14 +11,13 @@ do NOT nest thread pools inside the UDF).
 
 Scale design (SURVEY.md §7.2-6):
 - extraction is map-only: the stage adds no exchange of its own. The job
-  (``operators.checkpoint.run_resumable_extraction``) puts one
-  bucket-aligned exchange in front of it, so each task extracts exactly
-  one ``pmod(xxhash64(url), n_buckets)`` bucket, and writes all buckets
-  in one pass; ``operators.partitioning.repartition_by_url`` (one salted
-  url-hash exchange that spreads hot hosts) is for callers that want
-  balanced tasks instead, such as ``bench.py``;
-- per-bucket checkpoint manifests (``operators.checkpoint``) give lineage
-  and resume.
+  (``operators.checkpoint``) runs ``_extract_batches`` in the task of each
+  ``pmod(xxhash64(url), n_buckets)`` bucket, behind one bucket-aligned
+  exchange, and that task writes and commits its bucket itself;
+  ``extract_documents`` is the stage as a DataFrame, for the streaming
+  jobs and ``bench.py``, and ``operators.partitioning.repartition_by_url``
+  (one salted url-hash exchange that spreads hot hosts) gives them
+  balanced tasks.
 """
 
 from __future__ import annotations
@@ -81,10 +80,10 @@ def extract_documents(docs: DataFrame) -> DataFrame:
     """documents(url, warc_ts, html, text, lang) → extracted table.
 
     Column pruning drops the convenience ``text`` column at the scan
-    (ReadSchema excludes it). A filter the caller puts on ``docs`` (the
-    job's ``--langs``) sits below the UDF stage, so Catalyst pushes it into
-    the parquet scan (early-termination analogue, SURVEY §4 — skip
-    non-target rows before the expensive stage).
+    (ReadSchema excludes it). A filter the caller puts on ``docs`` sits
+    below the UDF stage, so Catalyst pushes it into the parquet scan
+    (early-termination analogue, SURVEY §4 — skip non-target rows before
+    the expensive stage).
     """
     cols = ["url", "warc_ts", "html", "lang"]
     return docs.select(*cols).mapInArrow(_extract_batches, schema=EXTRACT_OUTPUT_SCHEMA)

@@ -15,14 +15,10 @@ Every format shares one set of container mechanics:
 - **Encoder** (``_warc_member``): one record → one gzip member whose
   header mtime is pinned to 0 (``write_cdx``'s one gzip stream too), so
   equal records always give equal bytes.
-- **Sink** (``_segment_sink``, behind ``write_wet``/``write_wat``/
-  ``write_cdx``): each task streams its partition, one Arrow batch at a
-  time, into a tmp file private to its attempt, then ``os.replace``-s it
-  to a segment named after its partition and yields one manifest row
-  ``(file, n_records)``. A retried or speculative attempt thus overwrites
-  the first attempt's byte-identical segment, never adds a duplicate; an
-  empty partition writes no file; an attempt that raises removes its tmp
-  file. The caller's partitioning sizes the segments.
+- **Sink** (``sources.sink.segment_sink``, behind ``write_wet``/
+  ``write_wat``/``write_cdx``): each task streams its partition into one
+  segment named after its partition, under the publish contract it shares
+  with the extraction job. The caller's partitioning sizes the segments.
 - **Scan** (``_scan_segments``, behind ``read_warc_documents``/
   ``read_wet_documents``/``read_wat_metadata``/``index_warc_segments``):
   ``spark.read.format("binaryFile")`` gives one row per segment file and
@@ -65,6 +61,8 @@ from urllib.parse import quote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from deepseek_ocr_api_rs_spark.sources.sink import SEGMENT_MANIFEST, segment_sink
 
 _CRLF = b"\r\n"
 # NOTE: no ^ anchors — pattern.match(data, pos) anchors at pos, but ^ would
@@ -443,68 +441,6 @@ def read_warc_documents(
 
 
 # ---------------------------------------------------------------------------
-# The segment sink — shared by write_wet, write_wat and write_cdx
-
-
-def _segment_sink(
-    out_dir: str,
-    name: str,
-    encode: Callable[..., bytes],
-    open_segment: Callable = lambda path: open(path, "wb"),
-) -> Callable:
-    """The per-task function a writer hands to ``mapInPandas``: it streams
-    ``encode(*row)`` for every input row into ``open_segment(tmp)`` and
-    publishes the segment ``name.format(partitionId)`` under ``out_dir``
-    (contract in the module docstring). The tmp path carries
-    ``taskAttemptId()``: 'wb' on a tmp file shared by two live attempts
-    would interleave their writes and could publish a corrupt gzip."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(batches: Iterator) -> Iterator:
-        import pandas as pd
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else os.getpid()
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        segment = name.format(pid)
-        tmp = os.path.join(out_dir, f".{segment}.{attempt}.tmp")
-        n_recs = 0
-        try:
-            with contextlib.ExitStack() as stack:
-                out = None
-                for pdf in batches:
-                    for row in zip(*(pdf[c] for c in pdf.columns)):
-                        if out is None:
-                            out = stack.enter_context(open_segment(tmp))
-                        out.write(encode(*row))
-                        n_recs += 1
-        except BaseException:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(tmp)
-            raise
-        if n_recs == 0:
-            yield pd.DataFrame({"file": [], "n_records": []})
-            return
-        os.replace(tmp, os.path.join(out_dir, segment))
-        yield pd.DataFrame({"file": [segment], "n_records": [n_recs]})
-
-    return sink
-
-
-_MANIFEST_SCHEMA = "file string, n_records long"
-
-
-def _row_date(ts) -> dt.datetime | None:
-    """A timestamp cell of an Arrow batch → datetime (None for NULL)."""
-    import pandas as pd
-
-    if ts is None or pd.isna(ts):
-        return None
-    return ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-
-
-# ---------------------------------------------------------------------------
 # WET export (r6) — Common Crawl's extracted-text derivative (the
 # ``*.warc.wet.gz`` conversion files, ISO 28500 §6.8: ``WARC-Type:
 # conversion`` records whose block is the plain text of the page). This
@@ -544,20 +480,18 @@ def write_wet(
 ) -> DataFrame:
     """Distributed WET sink: each task writes its partition as one
     ``part-{partitionId}.warc.wet.gz`` segment through the shared segment
-    sink (atomic, retry-safe; see ``_segment_sink``) and emits a manifest
+    sink (atomic, retry-safe; see ``sources.sink``) and emits a manifest
     row (file, n_records). Map-only — the caller controls partitioning
     (and therefore segment sizing) upstream; Common Crawl's ~150 MB WET
     segments ≈ one task's worth. The returned manifest is lazy: an action
     on it IS the write."""
 
     def encode(url, ts, text) -> bytes:
-        return make_wet_record_gz(
-            {"url": url, "date": _row_date(ts), "text": text or ""}
-        )
+        return make_wet_record_gz({"url": url, "date": ts, "text": text or ""})
 
-    sink = _segment_sink(out_dir, "part-{:05d}.warc.wet.gz", encode)
-    return df.select(url_col, ts_col, text_col).mapInPandas(
-        sink, schema=_MANIFEST_SCHEMA
+    sink = segment_sink(out_dir, "part-{:05d}.warc.wet.gz", encode)
+    return df.select(url_col, ts_col, text_col).mapInArrow(
+        sink, schema=SEGMENT_MANIFEST
     )
 
 
@@ -625,22 +559,22 @@ def write_wat(
 ) -> DataFrame:
     """Distributed WAT sink: one ``part-{partitionId}.warc.wat.gz``
     segment per task through the shared segment sink (see
-    ``_segment_sink``), lazy manifest (file, n_records) as the return
+    ``sources.sink``), lazy manifest (file, n_records) as the return
     frame."""
 
     def encode(url, ts, title, links) -> bytes:
         return make_wat_record_gz(
             {
                 "url": url,
-                "date": _row_date(ts),
+                "date": ts,
                 "title": title,
-                "links": list(links) if links is not None else [],
+                "links": links or [],
             }
         )
 
-    sink = _segment_sink(out_dir, "part-{:05d}.warc.wat.gz", encode)
-    return df.select(url_col, ts_col, title_col, links_col).mapInPandas(
-        sink, schema=_MANIFEST_SCHEMA
+    sink = segment_sink(out_dir, "part-{:05d}.warc.wat.gz", encode)
+    return df.select(url_col, ts_col, title_col, links_col).mapInArrow(
+        sink, schema=SEGMENT_MANIFEST
     )
 
 
@@ -710,18 +644,18 @@ def _gzip_stream(path: str) -> Iterator[gzip.GzipFile]:
 
 def write_cdx(df: DataFrame, out_dir: str, line_col: str = "cdx_line") -> DataFrame:
     """Distributed CDX sink: one ``cdx-{partitionId}.gz`` segment per task
-    through the shared segment sink (see ``_segment_sink``), lines
+    through the shared segment sink (see ``sources.sink``), lines
     streamed through one gzip stream, lazy manifest (file, n_records) as
     the return frame. Sorts within the partition here (Spark's sort,
     spill-aware) so the per-task Python loop stays O(1) memory."""
-    sink = _segment_sink(
+    sink = segment_sink(
         out_dir,
         "cdx-{:05d}.gz",
         lambda line: line.encode("utf-8") + b"\n",
         _gzip_stream,
     )
     src = df.select(line_col).sortWithinPartitions(line_col)
-    return src.mapInPandas(sink, schema=_MANIFEST_SCHEMA)
+    return src.mapInArrow(sink, schema=SEGMENT_MANIFEST)
 
 
 def read_cdx(spark: SparkSession, path: str) -> DataFrame:

@@ -19,6 +19,13 @@ from deepseek_ocr_api_rs_spark.operators.checkpoint import (
 )
 
 
+def _tmp_files(root: str) -> list[str]:
+    """Every dot-file under ``root``: what an unfinished attempt leaves."""
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs if f.startswith(".")
+    )
+
+
 def test_resume_after_kill(spark, corpus_path, tmp_path):
     docs = spark.read.parquet(corpus_path)
     out1 = str(tmp_path / "out_resumed")
@@ -31,9 +38,9 @@ def test_resume_after_kill(spark, corpus_path, tmp_path):
     assert done1 == 3
     assert len(committed_buckets(spark, ckpt)) == 3
 
-    # the killed run's uncommitted buckets stay in _staging, which neither
-    # shows in the output nor reaches the manifest
-    assert os.listdir(os.path.join(out1, "_staging"))
+    # the killed tasks left their tmp data files, which neither show in
+    # the output nor reach the manifest
+    assert _tmp_files(out1)
     seen = {r.bucket for r in spark.read.parquet(out1).select("bucket").distinct().collect()}
     assert seen == committed_buckets(spark, ckpt)
 
@@ -64,7 +71,7 @@ def test_resume_after_kill(spark, corpus_path, tmp_path):
     rows = manifest.collect()
     assert sorted(r.bucket for r in rows) == list(range(8))
     assert {r.n_buckets for r in rows} == {8}
-    assert not os.path.exists(os.path.join(out1, "_staging"))
+    assert _tmp_files(out1) == []
     for r in rows:
         agg = (
             spark.read.parquet(os.path.join(out1, f"bucket={r.bucket}"))
@@ -91,8 +98,8 @@ def test_bucket_assignment_stable(spark, corpus_path):
 
 
 def test_one_plan_for_all_buckets(spark, corpus_path, tmp_path):
-    """The 8-bucket job scans once, writes once and commits from the driver,
-    so it starts a handful of Spark jobs, not several per bucket."""
+    """The 8-bucket job scans once and each task commits its own bucket, so
+    it starts a handful of Spark jobs, not several per bucket."""
     docs = spark.read.parquet(corpus_path)
     sc = spark.sparkContext
     group = "test_one_plan_for_all_buckets"
@@ -160,3 +167,96 @@ def test_resume_with_every_bucket_committed_runs_no_job(spark, corpus_path, tmp_
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
     assert not os.path.exists(os.path.join(out, "_staging"))
     assert read_manifest(ckpt).num_rows == 8
+
+
+def test_empty_bucket_is_committed(spark, corpus_path, tmp_path):
+    """A bucket still to do that has no input rows gets a manifest row with
+    ``n_docs = 0`` and no data file, so the rerun of a finished job starts
+    no Spark job."""
+    bucketed = with_bucket(spark.read.parquet(corpus_path), 8)
+    docs = bucketed.filter(F.col("bucket") != 5).drop("bucket")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    assert run_resumable_extraction(spark, docs, out, ckpt, n_buckets=8) == 8
+    rows = {r["bucket"]: r for r in read_manifest(ckpt).to_pylist()}
+    assert sorted(rows) == list(range(8))
+    assert rows[5]["n_docs"] == 0
+    assert not os.path.exists(os.path.join(out, "bucket=5"))
+    sc = spark.sparkContext
+    group = "test_empty_bucket_is_committed"
+    sc.setJobGroup(group, group)
+    try:
+        done = run_resumable_extraction(spark, docs, out, ckpt, n_buckets=8)
+    finally:
+        sc.setJobGroup("", "")
+    assert done == 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+
+def test_redo_removes_files_of_killed_attempts(spark, corpus_path, tmp_path):
+    """A tmp file that a killed attempt of another run left in a bucket
+    directory is gone once the bucket is published again."""
+    docs = spark.read.parquet(corpus_path)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    planted = []
+    for k in (0, 3):
+        d = os.path.join(out, f"bucket={k}")
+        os.makedirs(d)
+        planted.append(os.path.join(d, f".part-{k:05d}.parquet.987654.tmp"))
+        with open(planted[-1], "wb") as fh:
+            fh.write(b"partial")
+    assert run_resumable_extraction(spark, docs, out, ckpt, n_buckets=4) == 4
+    assert _tmp_files(out) == []
+    for k in range(4):
+        assert os.listdir(os.path.join(out, f"bucket={k}")) == [f"part-{k:05d}.parquet"]
+    assert spark.read.parquet(out).count() == docs.count()
+
+
+def test_retried_bucket_task_leaves_one_file_and_one_row(spark, corpus_path, tmp_path):
+    """A bucket's task run again more than a second later, as a retried
+    attempt is, replaces its data file with identical rows and its manifest
+    row, and adds neither a second file nor a second row."""
+    import functools
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from deepseek_ocr_api_rs_spark.operators.checkpoint import (
+        MANIFEST_SCHEMA,
+        _bucket_task,
+    )
+
+    docs = spark.read.parquet(corpus_path)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    bucket_dir = os.path.join(out, "bucket=2")
+    task = functools.partial(
+        _bucket_task,
+        output_dir=out,
+        checkpoint_dir=ckpt,
+        todo=frozenset({2}),
+        survivors=frozenset({2}),
+        run_id="retry",
+        n_buckets=4,
+    )
+
+    def attempt() -> list:
+        stage = (
+            with_bucket(docs, 4)
+            .repartitionById(4, "bucket")
+            .select("url", "warc_ts", "html", "lang")
+            .mapInArrow(task, schema=from_arrow_schema(MANIFEST_SCHEMA))
+        )
+        return stage.collect()
+
+    first = attempt()
+    files = os.listdir(bucket_dir)
+    data = pq.read_table(os.path.join(bucket_dir, files[0]))
+    time.sleep(1.1)
+    second = attempt()
+    assert [r.bucket for r in first] == [r.bucket for r in second] == [2]
+    assert os.listdir(bucket_dir) == files == ["part-00002.parquet"]
+    assert pq.read_table(os.path.join(bucket_dir, files[0])).equals(data)
+    manifest = read_manifest(ckpt).to_pylist()
+    assert [r["bucket"] for r in manifest] == [2]
+    assert manifest[0]["n_docs"] == data.num_rows == second[0].n_docs > 0
+    assert _tmp_files(out) == [] and _tmp_files(ckpt) == []

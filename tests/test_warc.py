@@ -579,17 +579,38 @@ def test_sink_retry_rewrites_identical_segments(spark, tmp_path, fmt):
 def test_segment_sink_removes_tmp_when_attempt_raises(tmp_path):
     """An attempt whose input fails after one batch re-raises and leaves
     neither a segment nor its tmp file."""
-    import pandas as pd
+    import pyarrow as pa
 
-    from deepseek_ocr_api_rs_spark.sources.warc import _segment_sink
+    from deepseek_ocr_api_rs_spark.sources.sink import segment_sink
 
     out = tmp_path / "seg"
-    sink = _segment_sink(str(out), "part-{:05d}.warc.wet.gz", lambda s: s.encode())
+    sink = segment_sink(str(out), "part-{:05d}.warc.wet.gz", lambda s: s.encode())
 
     def batches():
-        yield pd.DataFrame({"s": ["a", "b"]})
+        yield pa.record_batch({"s": ["a", "b"]})
         raise RuntimeError("attempt failed")
 
     with pytest.raises(RuntimeError, match="attempt failed"):
         list(sink(batches()))
     assert os.listdir(out) == []
+
+
+def test_segment_sink_removes_tmp_of_killed_attempt(spark, tmp_path):
+    """A tmp file that a killed attempt left next to its segment is gone
+    once the segment is published."""
+    from pyspark.sql import functions as F
+
+    from deepseek_ocr_api_rs_spark.sources.warc import write_wet
+
+    out = tmp_path / "wet"
+    out.mkdir()
+    for k in range(4):
+        (out / f".part-{k:05d}.warc.wet.gz.987654.tmp").write_bytes(b"partial")
+    rows = spark.range(0, 23).select(
+        F.concat(F.lit("https://k.example/"), F.col("id")).alias("url"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id")).alias("warc_ts"),
+        F.concat(F.lit("body-"), F.col("id")).alias("extracted_text"),
+    ).repartition(4, "url")
+    manifest = write_wet(rows, str(out)).collect()
+    assert sorted(os.listdir(out)) == sorted(r.file for r in manifest)
+    assert len(manifest) == 4 and sum(r.n_records for r in manifest) == 23
