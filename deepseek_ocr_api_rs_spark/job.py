@@ -41,9 +41,9 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument(
         "--snapshot-table",
         default=None,
-        help="also commit the run's output as an atomic snapshot of this "
-        "versioned table (sources.snapshots: snapshot-isolated readers, "
-        "time travel, per-run metrics lineage)",
+        help="also commit the run's output as the current version of this "
+        "versioned table, replacing the previous one (sources.snapshots: "
+        "snapshot-isolated readers, time travel, per-run metrics lineage)",
     )
     p.add_argument(
         "--compact-snapshots",
@@ -116,10 +116,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.snapshot_table:
         from deepseek_ocr_api_rs_spark.sources.snapshots import write_snapshot
 
+        # the output directory holds every run's buckets, so the new
+        # version replaces the previous one instead of adding to it
         version = write_snapshot(
             out,
             args.snapshot_table,
-            mode="append",
+            mode="overwrite",
             metrics={
                 "run_id": run_id,
                 "n_docs": n,

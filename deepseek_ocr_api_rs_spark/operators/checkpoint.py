@@ -195,4 +195,11 @@ def run_resumable_extraction(
         .mapInArrow(task, schema=from_arrow_schema(MANIFEST_SCHEMA))
         .collect()
     )
-    return len(rows)
+    # When no to-do bucket has input rows, AQE drops the empty exchange and
+    # no task runs: the driver commits the empty buckets no task returned.
+    unreturned = [] if fail_after_buckets is not None else sorted(
+        set(todo) - {r.bucket for r in rows}
+    )
+    for bucket in unreturned:
+        commit_bucket(output_dir, checkpoint_dir, bucket, (), run_id, n_buckets)
+    return len(rows) + len(unreturned)

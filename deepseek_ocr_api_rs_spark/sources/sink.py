@@ -1,6 +1,8 @@
 """The publish contract of every task that writes its own files: the WET,
 WAT and CDX writers (``sources.warc``), the resumable extraction job
-(``operators.checkpoint``) and the WARC staging of the ingest queries.
+(``operators.checkpoint``), the WARC staging of the ingest queries and the
+WebDataset shards (``sources.webdataset``, which claims a shard name with
+``os.link`` before it publishes).
 
 A task writes its segment into a tmp file private to its attempt
 (``.<segment>.<taskAttemptId>.tmp``: the dot hides it from Spark's and

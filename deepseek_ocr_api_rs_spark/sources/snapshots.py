@@ -26,14 +26,24 @@ few-MB JSON. Readers hit the driver-side JSON once and then do a normal
 distributed parquet scan of the listed files; no directory listing of
 ``data/`` ever happens on the read path (the analogue of Iceberg avoiding
 O(files) object-store LIST calls).
+
+Counting rule: every row count a commit records — ``n_rows`` and the
+counts in its ``operation`` string and metrics — is summed from the
+parquet footers of the files the manifest names (``_footer_rows``): the
+files the commit wrote (``_commit_write``) and the files it read or passes
+through. Footers are exact under task retries and cost no Spark job; an
+accumulator-backed metric can count a retried stage twice, and a
+read-back ``count()`` is one more job.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,22 +113,40 @@ def read_manifest(table_dir: str, version: int | None = None) -> dict:
         return json.load(f)
 
 
+def _with_marker(table_dir: str, metrics: dict) -> dict:
+    """``metrics`` with the table's stream-epoch marker carried forward:
+    a commit that does not itself advance ``stream_max_epoch`` stamps the
+    newest one (its own pre-r5 ``epoch_id`` counts too). Without the
+    carry, a batch commit on a stream table followed by
+    ``expire_snapshots`` strands the dedup walk (code-review r5). A CDC
+    batch's mid-epoch commit (``cdc_epoch``) withholds the marker on
+    purpose, so that a crash before its append replays the epoch."""
+    if "stream_max_epoch" in metrics or "cdc_epoch" in metrics:
+        return metrics
+    cands = [
+        int(x)
+        for x in (metrics.get("epoch_id"), last_stream_epoch(table_dir))
+        if x is not None
+    ]
+    return {"stream_max_epoch": max(cands), **metrics} if cands else metrics
+
+
 def _publish(
     table_dir: str,
     manifest: dict,
     max_retries: int = 32,
-    append_files: list[str] | None = None,
-    append_rows: int = 0,
+    append: bool = False,
     require_parent: int | None = None,
 ) -> int:
     """Atomic optimistic commit: claim the next version number with a hard
     link (create-if-absent); on collision refresh the parent and retry.
 
-    ``append_files`` puts the merge-with-parent INSIDE the retry loop: the
-    loser of a version race re-reads the freshly-committed parent manifest
-    and re-merges, so a concurrent winner's files are never dropped from the
-    retried commit (reading the parent once, before the loop, silently lost
-    the winner's files on every collision — ADVICE r3).
+    ``append`` adds the manifest's files, rows and stats to the parent's
+    INSIDE the retry loop: the loser of a version race re-reads the
+    freshly-committed parent manifest and re-merges, so a concurrent
+    winner's files are never dropped from the retried commit (reading the
+    parent once, before the loop, silently lost the winner's files on
+    every collision — ADVICE r3).
 
     ``require_parent`` is the compare-and-swap form for WHOLE-TABLE
     rewrites (compaction): the commit is valid only against the exact
@@ -126,14 +154,6 @@ def _publish(
     retrying would silently erase that writer's rows, so the publish
     raises ``CommitConflict`` instead (Iceberg's validate-then-commit)."""
     os.makedirs(_snap_dir(table_dir), exist_ok=True)
-    # every retry derives from the CALLER's manifest, never the previous
-    # iteration's merged one — reusing the merged dict made the second
-    # iteration see its own carried stream_max_epoch and skip re-carrying
-    # from the NEW parent, publishing a regressed dedup marker after a
-    # lost race (code-review r5 pass 2)
-    base = dict(manifest)
-    base_metrics = dict(base.get("metrics", {}))
-    base_stats = dict(base.get("file_stats", {}))
     for _ in range(max_retries):
         cur = current_version(table_dir)
         if require_parent is not None and cur != require_parent:
@@ -142,51 +162,28 @@ def _publish(
                 "re-run the rewrite against the current version"
             )
         version = (cur or 0) + 1
-        attempt = dict(base)
-        if append_files is not None:
-            prev_files: list[str] = []
-            prev_rows = 0
-            prev_metrics: dict = {}
-            prev_stats: dict = {}
-            prev_deletes: list = []
-            if cur is not None:
-                prev = read_manifest(table_dir, cur)
-                prev_files = prev["files"]
-                prev_rows = prev["n_rows"]
-                prev_metrics = prev.get("metrics", {})
-                prev_stats = prev.get("file_stats", {})
-                prev_deletes = prev.get("deletes", [])
-            metrics = dict(base_metrics)
-            # an append that does not itself advance the stream-epoch
-            # marker must CARRY the parent's forward (falling back to the
-            # pre-r5 per-commit epoch_id form): otherwise a batch append
-            # on top of a stream table drops the marker and a later
-            # expire_snapshots strands the dedup walk (code-review r5)
-            if "stream_max_epoch" not in metrics:
-                cands = [
-                    int(x)
-                    for x in (
-                        metrics.get("epoch_id"),  # pre-r5-style commit
-                        prev_metrics.get(
-                            "stream_max_epoch", prev_metrics.get("epoch_id")
-                        ),
-                    )
-                    if x is not None
-                ]
-                if cands:
-                    metrics["stream_max_epoch"] = max(cands)
-            attempt = dict(
-                attempt,
-                files=prev_files + append_files,
-                n_rows=prev_rows + append_rows,
-                metrics=metrics,
-                file_stats={**prev_stats, **base_stats},
+        # every retry derives from the CALLER's manifest, never the
+        # previous iteration's merged one — reusing the merged dict made
+        # the second iteration see its own carried stream_max_epoch and
+        # skip re-carrying from the NEW parent, publishing a regressed
+        # dedup marker after a lost race (code-review r5 pass 2)
+        attempt = dict(manifest)
+        if append:
+            prev = read_manifest(table_dir, cur) if cur is not None else {}
+            attempt.update(
+                files=prev.get("files", []) + manifest["files"],
+                n_rows=prev.get("n_rows", 0) + manifest["n_rows"],
+                metrics=_with_marker(table_dir, manifest.get("metrics", {})),
+                file_stats={
+                    **prev.get("file_stats", {}),
+                    **manifest.get("file_stats", {}),
+                },
             )
-            if prev_deletes:
+            if prev.get("deletes"):
                 # outstanding MOR deletes survive appends; their scope
                 # stays the OLD file set, so appended rows are untouched
-                attempt["deletes"] = prev_deletes + attempt.get("deletes", [])
-        attempt = dict(attempt, version=version, parent=cur)
+                attempt["deletes"] = prev["deletes"] + manifest.get("deletes", [])
+        attempt.update(version=version, parent=cur)
         tmp = os.path.join(
             _snap_dir(table_dir), f".tmp-{uuid.uuid4().hex}.json"
         )
@@ -200,6 +197,70 @@ def _publish(
         finally:
             os.unlink(tmp)
     raise CommitConflict(f"could not commit to {table_dir} after {max_retries} tries")
+
+
+def _footer_rows(table_dir: str, rels: list[str]) -> int:
+    """Rows in the parquet files ``rels``, summed from their footers on the
+    driver: exact, and no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(os.path.join(table_dir, r)).num_rows for r in rels)
+
+
+def _commit_write(
+    table_dir: str,
+    df: DataFrame | None,
+    manifest_for: Callable[[list[str], int], dict | None],
+    rel_dir: str | None = None,
+    partition_by: str | None = None,
+    **publish,
+) -> int | None:
+    """The write step of every commit: write ``df`` under a fresh
+    ``rel_dir`` (``data/<uuid>`` by default; ``df=None`` writes nothing),
+    list the parquet files it committed, and publish
+    ``manifest_for(files, n_rows)`` with ``_publish(**publish)``, where
+    ``n_rows`` comes from the files' footers. Returns the version, or None
+    when ``manifest_for`` returns None; then, and when anything raises,
+    ``rel_dir`` is removed, so a commit that publishes nothing leaves
+    nothing behind."""
+    rel_dir = rel_dir or os.path.join("data", uuid.uuid4().hex)
+    out = os.path.join(table_dir, rel_dir)
+    version = None
+    try:
+        files: list[str] = []
+        if df is not None:
+            writer = df.write.mode("error")
+            if partition_by:
+                writer = writer.partitionBy(partition_by)
+            writer.parquet(out)
+            files = sorted(
+                os.path.relpath(os.path.join(d, name), table_dir)
+                for d, _, names in os.walk(out)
+                for name in names
+                if name.endswith(".parquet")
+            )
+        manifest = manifest_for(files, _footer_rows(table_dir, files))
+        if manifest is not None:
+            version = _publish(table_dir, manifest, **publish)
+    finally:
+        if version is None:
+            shutil.rmtree(out, ignore_errors=True)
+    return version
+
+
+def _rewrite_base(table_dir: str) -> tuple[int | None, dict]:
+    """(version, manifest) of the table a rewrite starts from. Raises while
+    merge-on-read delete batches are outstanding: a rewrite would rename
+    files out of their scope and resurrect deleted rows."""
+    base_version = current_version(table_dir)
+    base = read_manifest(table_dir, base_version)
+    if base.get("deletes"):
+        raise RuntimeError(
+            "outstanding merge-on-read delete batches: run apply_deletes "
+            "first — a rewrite would rename files out of their scope and "
+            "resurrect deleted rows"
+        )
+    return base_version, base
 
 
 def write_snapshot(
@@ -216,66 +277,49 @@ def write_snapshot(
 
     ``stats_cols`` records per-FILE min/max for the named columns in the
     manifest (Iceberg's manifest-level column stats): one distributed
-    pass grouped by ``input_file_name`` — which also yields the row count,
-    so stats cost no extra scan — and ``read_snapshot(..., where=...)``
-    then prunes whole files on the DRIVER before Spark ever plans the
-    scan. At 10^12 rows the manifest prune is what turns a
-    time/key-range query from "touch every file's footer" into "open
-    only the files that can match". Returns the version."""
+    pass over the new files grouped by ``input_file_name``, and
+    ``read_snapshot(..., where=...)`` then prunes whole files on the
+    DRIVER before Spark ever plans the scan. At 10^12 rows the manifest
+    prune is what turns a time/key-range query from "touch every file's
+    footer" into "open only the files that can match". Returns the
+    version."""
     if mode not in ("append", "overwrite"):
         raise ValueError(mode)
-    stamp = uuid.uuid4().hex
-    rel_dir = os.path.join("data", stamp)
-    out = os.path.join(table_dir, rel_dir)
-    df.write.mode("error").parquet(out)
-    files = sorted(
-        os.path.join(rel_dir, name)
-        for name in os.listdir(out)
-        if name.endswith(".parquet")
-    )
-    spark = df.sparkSession
-    file_stats: dict[str, dict] = {}
-    if stats_cols:
-        from pyspark.sql import functions as F
 
-        back = spark.read.parquet(out)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in stats_cols:
-            aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-        rows = (
-            back.groupBy(F.input_file_name().alias("__file"))
-            .agg(*aggs)
-            .collect()
-        )
-        n_rows = 0
-        for r in rows:
-            n_rows += r["__n"]
-            name = os.path.basename(r["__file"])
-            file_stats[os.path.join(rel_dir, name)] = {
-                c: [_stat_repr(r[f"__min_{c}"]), _stat_repr(r[f"__max_{c}"])]
-                for c in stats_cols
-            }
-    else:
-        n_rows = spark.read.parquet(out).count()
-    manifest = {
-        "files": files,
-        "n_rows": n_rows,
-        "committed_ts": time.time(),
-        "operation": mode,
-        "metrics": metrics or {},
-        "file_stats": file_stats,
-        # schema evolution (r6, the Iceberg way): the manifest carries
-        # the CURRENT table schema — the latest writer's — and reads
-        # apply it explicitly, so an appended column surfaces as NULL in
-        # pre-evolution files without any footer-merge pass, and a
-        # dropped column disappears. Additive/drop evolution only;
-        # retyping a column is a caller error.
-        "schema": df.schema.json(),
-    }
-    if mode == "append":
-        # merge with the parent INSIDE the optimistic-retry loop
-        return _publish(table_dir, manifest, append_files=files, append_rows=n_rows)
-    return _publish(table_dir, manifest)
+    def manifest(files: list[str], n_rows: int) -> dict:
+        file_stats: dict[str, dict] = {}
+        if stats_cols and files:
+            aggs = []
+            for c in stats_cols:
+                aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
+            rel_dir = os.path.dirname(files[0])
+            for r in (
+                df.sparkSession.read.parquet(os.path.join(table_dir, rel_dir))
+                .groupBy(F.input_file_name().alias("__file"))
+                .agg(*aggs)
+                .collect()
+            ):
+                file_stats[os.path.join(rel_dir, os.path.basename(r["__file"]))] = {
+                    c: [_stat_repr(r[f"__min_{c}"]), _stat_repr(r[f"__max_{c}"])]
+                    for c in stats_cols
+                }
+        return {
+            "files": files,
+            "n_rows": n_rows,
+            "committed_ts": time.time(),
+            "operation": mode,
+            "metrics": metrics or {},
+            "file_stats": file_stats,
+            # schema evolution (r6, the Iceberg way): the manifest carries
+            # the CURRENT table schema — the latest writer's — and reads
+            # apply it explicitly, so an appended column surfaces as NULL
+            # in pre-evolution files without any footer-merge pass, and a
+            # dropped column disappears. Additive/drop evolution only;
+            # retyping a column is a caller error.
+            "schema": df.schema.json(),
+        }
+
+    return _commit_write(table_dir, df, manifest, append=mode == "append")
 
 
 def _table_reader(spark: SparkSession, manifest: dict):
@@ -440,17 +484,10 @@ def compact(
     marker is carried forward so epoch-replay dedup stays O(1) across
     compactions. No-op (everything already ≥ target) returns the current
     version unchanged. Returns the (possibly new) version."""
-    base_version = current_version(table_dir)
-    base = read_manifest(table_dir, base_version)
+    base_version, base = _rewrite_base(table_dir)
     rels = base["files"]
     if not rels:
         return base_version
-    if base.get("deletes"):
-        raise RuntimeError(
-            "outstanding merge-on-read delete batches: run apply_deletes "
-            "first — a rewrite would rename files out of their scope and "
-            "resurrect deleted rows"
-        )
     sizes = {rel: os.path.getsize(os.path.join(table_dir, rel)) for rel in rels}
     if target_files is not None:
         total = sum(sizes.values())
@@ -473,9 +510,6 @@ def compact(
         else:
             bins.append([rel])
             bin_free.append(target_bytes - sizes[rel])
-    stamp = uuid.uuid4().hex
-    rel_dir = os.path.join("data", stamp)
-    out = os.path.join(table_dir, rel_dir)
     # ONE Spark job rewrites ALL bins (judge ask r5 #5 — the old loop ran
     # one driver-serialized job per bin): tag each row with its bin id by
     # broadcast-joining input_file_name()'s basename (parquet part names
@@ -497,74 +531,54 @@ def compact(
     ).withColumn(
         "_file_name", F.element_at(F.split(F.input_file_name(), "/"), -1)
     )
-    (
+    # A bin of zero-row source files writes no ``_bin=`` directory, so it
+    # adds no file (code-review r6).
+    rewritten = (
         src.join(F.broadcast(map_df), "_file_name")
         .drop("_file_name")
         .repartition(len(bins), "_bin")
-        .write.mode("error")
-        .partitionBy("_bin")
-        .parquet(out)
     )
-    files: list[str] = []
-    for bi in range(len(bins)):
-        bin_out = os.path.join(out, f"_bin={bi}")
-        if not os.path.isdir(bin_out):
-            # a bin of zero-row source files writes no partition dir
-            # (dynamic overwrite creates dirs per value present) — skip
-            # instead of FileNotFoundError (code-review r6)
-            continue
-        files.extend(
-            sorted(
-                os.path.join(rel_dir, f"_bin={bi}", name)
-                for name in os.listdir(bin_out)
-                if name.endswith(".parquet")
-            )
-        )
-    all_files = sorted(files + passthrough)
-    n_rows = (
-        spark.read.parquet(
-            *(os.path.join(table_dir, f) for f in all_files)
-        ).count()
-        if all_files
-        else 0
-    )
-    # invariant: compaction rewrites bytes, never rows. A count drift here
-    # means the basename→bin join dropped or duplicated rows (e.g. a
-    # basename collision) — fail the commit, never publish a lossy rewrite.
-    if n_rows != base["n_rows"]:
-        raise RuntimeError(
-            f"compaction row-count drift: {base['n_rows']} -> {n_rows}"
-        )
-    # resolve the marker via the full pre-rewrite walk, not just the base
-    # manifest's metrics: a pre-r5 chain carries only per-commit epoch_id
-    # entries deeper in the lineage (code-review r5)
-    marker = last_stream_epoch(table_dir)
-    carried = {} if marker is None else {"stream_max_epoch": marker}
     base_stats = base.get("file_stats", {})
-    manifest = {
-        "files": all_files,
-        "n_rows": n_rows,
-        "committed_ts": time.time(),
-        # pass-through files keep their column stats; rewritten bins get
-        # none (they are never pruned — safe — and regain stats on the
-        # next stats-carrying write)
-        "file_stats": {
-            f: base_stats[f] for f in passthrough if f in base_stats
-        },
-        "operation": f"compact({len(rels)}->{len(all_files)})",
-        "schema": base.get("schema"),
-        "metrics": dict(
-            carried,
-            **dict(
-                metrics or {},
-                files_before=len(rels),
-                files_after=len(all_files),
-                files_rewritten=len(small),
-                files_passthrough=len(passthrough),
+
+    def manifest(files: list[str], n_new: int) -> dict:
+        all_files = sorted(files + passthrough)
+        n_rows = n_new + _footer_rows(table_dir, passthrough)
+        # invariant: compaction rewrites bytes, never rows. A count drift
+        # here means the basename→bin join dropped or duplicated rows
+        # (e.g. a basename collision) — fail the commit, never publish a
+        # lossy rewrite.
+        if n_rows != base["n_rows"]:
+            raise RuntimeError(
+                f"compaction row-count drift: {base['n_rows']} -> {n_rows}"
+            )
+        return {
+            "files": all_files,
+            "n_rows": n_rows,
+            "committed_ts": time.time(),
+            # pass-through files keep their column stats; rewritten bins
+            # get none (they are never pruned — safe — and regain stats on
+            # the next stats-carrying write)
+            "file_stats": {
+                f: base_stats[f] for f in passthrough if f in base_stats
+            },
+            "operation": f"compact({len(rels)}->{len(all_files)})",
+            "schema": base.get("schema"),
+            "metrics": _with_marker(
+                table_dir,
+                dict(
+                    metrics or {},
+                    files_before=len(rels),
+                    files_after=len(all_files),
+                    files_rewritten=len(small),
+                    files_passthrough=len(passthrough),
+                ),
             ),
-        ),
-    }
-    return _publish(table_dir, manifest, require_parent=base_version)
+        }
+
+    return _commit_write(
+        table_dir, rewritten, manifest, partition_by="_bin",
+        require_parent=base_version,
+    )
 
 
 def delete_where(
@@ -587,82 +601,52 @@ def delete_where(
     predicate matching zero rows publishes nothing. The
     ``stream_max_epoch`` marker is carried forward. Returns the
     (possibly new) version."""
-    base_version = current_version(table_dir)
-    base = read_manifest(table_dir, base_version)
+    base_version, base = _rewrite_base(table_dir)
     rels = base["files"]
-    if not rels:
-        return base_version
-    if base.get("deletes"):
-        raise RuntimeError(
-            "outstanding merge-on-read delete batches: run apply_deletes "
-            "first — a rewrite would rename files out of their scope and "
-            "resurrect deleted rows"
-        )
     stats = base.get("file_stats", {})
     candidates = _prune_files(rels, stats, prune) if prune else list(rels)
     cand_set = set(candidates)
     untouched = [f for f in rels if f not in cand_set]
     if not candidates:
         return base_version
-    from pyspark.sql import Observation
-
-    src = _table_reader(spark, base).parquet(
-        *(os.path.join(table_dir, f) for f in candidates)
-    )
-    stamp = uuid.uuid4().hex
-    rel_dir = os.path.join("data", stamp)
-    out = os.path.join(table_dir, rel_dir)
-    # ONE job: candidate and survivor counts ride the rewrite itself as
-    # Observation metrics (computed by the very job that writes the
-    # files) instead of a pre-count pass plus a read-back count pass —
-    # three scans of the candidate set become one.
-    obs_cand, obs_kept = Observation(), Observation()
     # SQL DELETE semantics: only rows where the predicate is TRUE are
     # deleted — a NULL predicate keeps the row (three-valued logic;
     # plain NOT(pred) silently dropped NULL rows, code-review r6)
-    (
-        src.observe(obs_cand, F.count(F.lit(1)).alias("n"))
-        .filter(f"NOT coalesce(({predicate}), false)")
-        .observe(obs_kept, F.count(F.lit(1)).alias("n"))
-        .write.mode("error")
-        .parquet(out)
-    )
-    n_cand = obs_cand.get["n"]
-    n_kept = obs_kept.get["n"]
-    new_files = sorted(
-        os.path.join(rel_dir, name)
-        for name in os.listdir(out)
-        if name.endswith(".parquet")
-    )
-    n_deleted = n_cand - n_kept
-    if n_deleted == 0:
-        # nothing matched: the freshly-written dir is an invisible
-        # orphan (never manifested) — no useless version published
-        return base_version
-    marker = last_stream_epoch(table_dir)
-    carried = {} if marker is None else {"stream_max_epoch": marker}
-    manifest = {
-        "files": sorted(untouched + new_files),
-        "n_rows": base["n_rows"] - n_deleted,
-        "committed_ts": time.time(),
-        # untouched files keep their stats; rewritten files regain them
-        # on the next stats-carrying write (same policy as compact)
-        "file_stats": {f: stats[f] for f in untouched if f in stats},
-        "operation": (
-            f"delete({n_deleted} rows, {len(candidates)} files rewritten)"
-        ),
-        "schema": base.get("schema"),
-        "metrics": dict(
-            carried,
-            **dict(
-                metrics or {},
-                rows_deleted=n_deleted,
-                files_rewritten=len(candidates),
-                files_passthrough=len(untouched),
+    kept = _table_reader(spark, base).parquet(
+        *(os.path.join(table_dir, f) for f in candidates)
+    ).filter(f"NOT coalesce(({predicate}), false)")
+    n_cand = _footer_rows(table_dir, candidates)
+
+    def manifest(new_files: list[str], n_kept: int) -> dict | None:
+        n_deleted = n_cand - n_kept
+        if n_deleted == 0:
+            return None  # nothing matched: no useless version published
+        return {
+            "files": sorted(untouched + new_files),
+            "n_rows": base["n_rows"] - n_deleted,
+            "committed_ts": time.time(),
+            # untouched files keep their stats; rewritten files regain
+            # them on the next stats-carrying write (same policy as compact)
+            "file_stats": {f: stats[f] for f in untouched if f in stats},
+            "operation": (
+                f"delete({n_deleted} rows, {len(candidates)} files rewritten)"
             ),
-        ),
-    }
-    return _publish(table_dir, manifest, require_parent=base_version)
+            "schema": base.get("schema"),
+            "metrics": _with_marker(
+                table_dir,
+                dict(
+                    metrics or {},
+                    rows_deleted=n_deleted,
+                    files_rewritten=len(candidates),
+                    files_passthrough=len(untouched),
+                ),
+            ),
+        }
+
+    return (
+        _commit_write(table_dir, kept, manifest, require_parent=base_version)
+        or base_version
+    )
 
 
 def delete_keys(
@@ -683,50 +667,32 @@ def delete_keys(
     Returns the new version."""
     base_version = current_version(table_dir)
     base = read_manifest(table_dir, base_version)
-    stamp = uuid.uuid4().hex
-    rel = os.path.join("deletes", f"{stamp}.parquet")
-    out = os.path.join(table_dir, rel)
-    from pyspark.sql import Observation
+    rel = os.path.join("deletes", f"{uuid.uuid4().hex}.parquet")
 
-    # the key count rides the delete-file write as an Observation metric
-    # (one job instead of count-then-write over a persisted frame); a
-    # zero-key batch leaves the freshly-written empty file as an
-    # invisible orphan — never manifested, same discipline as
-    # delete_where's no-match path
-    obs = Observation()
-    kdf = keys.select(key_col).distinct().observe(
-        obs, F.count(F.lit(1)).alias("n")
+    def manifest(_files: list[str], n_keys: int) -> dict | None:
+        if n_keys == 0:
+            return None
+        return {
+            "files": base["files"],
+            "n_rows": base["n_rows"],  # logical rows pending materialization
+            "committed_ts": time.time(),
+            "file_stats": base.get("file_stats", {}),
+            "schema": base.get("schema"),
+            "deletes": base.get("deletes", [])
+            + [{"file": rel, "key": key_col, "n_keys": n_keys,
+                "scope": base["files"]}],
+            "operation": f"delete_keys({n_keys} keys)",
+            "metrics": _with_marker(table_dir, dict(
+                metrics or {}, delete_batches=len(base.get("deletes", [])) + 1
+            )),
+        }
+
+    keys = keys.select(key_col).distinct().coalesce(1)
+    return (
+        _commit_write(table_dir, keys, manifest, rel_dir=rel,
+                      require_parent=base_version)
+        or base_version
     )
-    kdf.coalesce(1).write.mode("error").parquet(out)
-    n_keys = obs.get["n"]
-    if n_keys == 0:
-        return base_version
-    # carry the stream-epoch marker UNLESS the caller supplies its own
-    # marker policy (the CDC sink deliberately withholds it mid-epoch):
-    # without the carry, a manual delete_keys on a stream table followed
-    # by expire_snapshots would strand the dedup walk (same class as the
-    # apply_deletes fix, code-review r6)
-    carried = {}
-    if not metrics or (
-        "stream_max_epoch" not in metrics and "cdc_epoch" not in metrics
-    ):
-        marker = last_stream_epoch(table_dir)
-        if marker is not None:
-            carried = {"stream_max_epoch": marker}
-    manifest = {
-        "files": base["files"],
-        "n_rows": base["n_rows"],  # logical rows pending materialization
-        "committed_ts": time.time(),
-        "file_stats": base.get("file_stats", {}),
-        "schema": base.get("schema"),
-        "deletes": base.get("deletes", [])
-        + [{"file": rel, "key": key_col, "n_keys": n_keys,
-            "scope": base["files"]}],
-        "operation": f"delete_keys({n_keys} keys)",
-        "metrics": dict(carried, **dict(metrics or {}, delete_batches=len(
-            base.get("deletes", [])) + 1)),
-    }
-    return _publish(table_dir, manifest, require_parent=base_version)
 
 
 def _apply_delete_batches(
@@ -773,11 +739,7 @@ def apply_deletes(
     touched = [f for f in base["files"] if f in scoped]
     untouched = [f for f in base["files"] if f not in scoped]
     stats = base.get("file_stats", {})
-    stamp = uuid.uuid4().hex
-    rel_dir = os.path.join("data", stamp)
-    out = os.path.join(table_dir, rel_dir)
-    new_files: list[str] = []
-    n_kept = 0
+    kept = None
     if touched:
         src = (
             _table_reader(spark, base)
@@ -787,44 +749,30 @@ def apply_deletes(
             )
         )
         kept = _apply_delete_batches(spark, table_dir, src, deletes).drop("_f")
-        kept.write.mode("error").parquet(out)
-        new_files = sorted(
-            os.path.join(rel_dir, name)
-            for name in os.listdir(out)
-            if name.endswith(".parquet")
-        )
-        if new_files:
-            n_kept = spark.read.parquet(
-                *(os.path.join(table_dir, f) for f in new_files)
-            ).count()
-    n_untouched = 0
-    if untouched:
-        n_untouched = spark.read.parquet(
-            *(os.path.join(table_dir, f) for f in untouched)
-        ).count()
-    marker = last_stream_epoch(table_dir)
-    carried = {} if marker is None else {"stream_max_epoch": marker}
-    manifest = {
-        "files": sorted(untouched + new_files),
-        "n_rows": n_kept + n_untouched,
-        "committed_ts": time.time(),
-        "file_stats": {f: stats[f] for f in untouched if f in stats},
-        "schema": base.get("schema"),
-        "operation": (
-            f"apply_deletes({len(deletes)} batches, "
-            f"{len(touched)} files rewritten)"
-        ),
-        "metrics": dict(
-            carried,
-            **dict(
-                metrics or {},
-                delete_batches_applied=len(deletes),
-                files_rewritten=len(touched),
-                files_passthrough=len(untouched),
+
+    def manifest(new_files: list[str], n_kept: int) -> dict:
+        return {
+            "files": sorted(untouched + new_files),
+            "n_rows": n_kept + _footer_rows(table_dir, untouched),
+            "committed_ts": time.time(),
+            "file_stats": {f: stats[f] for f in untouched if f in stats},
+            "schema": base.get("schema"),
+            "operation": (
+                f"apply_deletes({len(deletes)} batches, "
+                f"{len(touched)} files rewritten)"
             ),
-        ),
-    }
-    return _publish(table_dir, manifest, require_parent=base_version)
+            "metrics": _with_marker(
+                table_dir,
+                dict(
+                    metrics or {},
+                    delete_batches_applied=len(deletes),
+                    files_rewritten=len(touched),
+                    files_passthrough=len(untouched),
+                ),
+            ),
+        }
+
+    return _commit_write(table_dir, kept, manifest, require_parent=base_version)
 
 
 def merge_into(
@@ -846,16 +794,9 @@ def merge_into(
     duplicates, exactly like a blind append would). History stays
     time-travelable; CAS on publish; the ``stream_max_epoch`` marker is
     carried forward. Returns the new version."""
-    base_version = current_version(table_dir)
-    base = read_manifest(table_dir, base_version)
+    base_version, base = _rewrite_base(table_dir)
     rels = base["files"]
     stats = base.get("file_stats", {})
-    if base.get("deletes"):
-        raise RuntimeError(
-            "outstanding merge-on-read delete batches: run apply_deletes "
-            "first — a rewrite would rename files out of their scope and "
-            "resurrect deleted rows"
-        )
     upd = updates.persist()
     try:
         # one pass over the (persisted) updates for count AND key bounds
@@ -874,66 +815,52 @@ def merge_into(
         )
         cand_set = set(candidates)
         untouched = [f for f in rels if f not in cand_set]
-        stamp = uuid.uuid4().hex
-        rel_dir = os.path.join("data", stamp)
-        out = os.path.join(table_dir, rel_dir)
+        new_rows = upd
         if candidates:
             # read candidates under the UPDATES' schema (the table's new
             # schema, latest-writer-wins): a column the updates add is
             # NULL-filled in pre-evolution files instead of breaking the
-            # select below (code-review r6)
-            from pyspark.sql import Observation
-
-            src = spark.read.schema(upd.schema).parquet(
-                *(os.path.join(table_dir, f) for f in candidates)
+            # select below (code-review r6). No broadcast hint: small
+            # update sets broadcast via AQE on their own; a bulk upsert's
+            # key frame may exceed the limit and must be allowed to shuffle
+            new_rows = (
+                spark.read.schema(upd.schema)
+                .parquet(*(os.path.join(table_dir, f) for f in candidates))
+                .join(upd.select(key_col), key_col, "left_anti")
+                .select(*upd.columns)
+                .unionByName(upd)
             )
-            # candidate and survivor counts ride the rewrite job as
-            # Observation metrics — the old pre-count + read-back-count
-            # pattern scanned the candidates three times (same change as
-            # delete_where)
-            obs_cand, obs_kept = Observation(), Observation()
-            # no broadcast hint: small update sets broadcast via AQE on
-            # their own; a bulk upsert's key frame may exceed the limit
-            # and must be allowed to shuffle
-            kept = src.observe(
-                obs_cand, F.count(F.lit(1)).alias("n")
-            ).join(upd.select(key_col), key_col, "left_anti")
-            kept.observe(obs_kept, F.count(F.lit(1)).alias("n")).select(
-                *upd.columns
-            ).unionByName(upd).write.mode("error").parquet(out)
-            n_matched = obs_cand.get["n"] - obs_kept.get["n"]
-        else:
-            upd.write.mode("error").parquet(out)
-            n_matched = 0
-        new_files = sorted(
-            os.path.join(rel_dir, name)
-            for name in os.listdir(out)
-            if name.endswith(".parquet")
-        )
-        marker = last_stream_epoch(table_dir)
-        carried = {} if marker is None else {"stream_max_epoch": marker}
-        manifest = {
-            "files": sorted(untouched + new_files),
-            "n_rows": base["n_rows"] - n_matched + n_upd,
-            "committed_ts": time.time(),
-            "file_stats": {f: stats[f] for f in untouched if f in stats},
-            "operation": (
-                f"merge({n_matched} updated, {n_upd - n_matched} inserted, "
-                f"{len(candidates)} files rewritten)"
-            ),
-            "schema": upd.schema.json(),
-            "metrics": dict(
-                carried,
-                **dict(
-                    metrics or {},
-                    rows_updated=n_matched,
-                    rows_inserted=n_upd - n_matched,
-                    files_rewritten=len(candidates),
-                    files_passthrough=len(untouched),
+        n_cand = _footer_rows(table_dir, candidates)
+
+        def manifest(new_files: list[str], n_new: int) -> dict:
+            # the new files hold the candidates' unmatched rows plus the
+            # updates
+            n_matched = n_cand - (n_new - n_upd)
+            return {
+                "files": sorted(untouched + new_files),
+                "n_rows": base["n_rows"] - n_matched + n_upd,
+                "committed_ts": time.time(),
+                "file_stats": {f: stats[f] for f in untouched if f in stats},
+                "operation": (
+                    f"merge({n_matched} updated, {n_upd - n_matched} inserted, "
+                    f"{len(candidates)} files rewritten)"
                 ),
-            ),
-        }
-        return _publish(table_dir, manifest, require_parent=base_version)
+                "schema": upd.schema.json(),
+                "metrics": _with_marker(
+                    table_dir,
+                    dict(
+                        metrics or {},
+                        rows_updated=n_matched,
+                        rows_inserted=n_upd - n_matched,
+                        files_rewritten=len(candidates),
+                        files_passthrough=len(untouched),
+                    ),
+                ),
+            }
+
+        return _commit_write(
+            table_dir, new_rows, manifest, require_parent=base_version
+        )
     finally:
         upd.unpersist()
 

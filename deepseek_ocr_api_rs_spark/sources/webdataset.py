@@ -9,12 +9,13 @@ shards sequentially. This module writes extraction output as such
 shards and reads them back — the training-side handoff of this
 pipeline, completing WARC/WET/WAT/CDX with the downstream format.
 
-Sink contract (the WET/WAT/CDX discipline):
+Sink contract (the WET/WAT/CDX discipline, ``sources.sink``):
 - one ``shard-<min_key>.tar`` per input partition — task-identity
-  naming, so a retried or speculative attempt REWRITES the same shard
-  instead of adding a duplicate; the write goes to an attempt-private
-  tmp name (no ".tar" suffix — readers can never glob a half-written
-  file) followed by an atomic ``os.replace``;
+  naming, so a retried or speculative attempt lands on the same shard
+  instead of adding a duplicate; the write goes to the attempt's tmp
+  file (``sink.attempt_file``: a dot-name readers never glob, removed if
+  the attempt raises), which ``os.link`` then publishes under the shard
+  name only if that name is absent;
 - byte-DETERMINISTIC shards: members in sorted-key order, USTAR format,
   zeroed mtime/uid/gid/uname/gname and fixed 0644 mode — two runs (or
   two attempts) of the same partition produce identical bytes, so
@@ -33,11 +34,12 @@ from __future__ import annotations
 import io
 import os
 import tarfile
-import uuid
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from deepseek_ocr_api_rs_spark.sources.sink import attempt_file, publish
 
 
 def _tar_bytes(samples: list[tuple[str, list[tuple[str, bytes]]]]) -> bytes:
@@ -114,26 +116,29 @@ def write_wds_shards(
                     )
         name = f"shard-{rows[0][0]}.tar"
         data = _tar_bytes(rows)
-        target = os.path.join(out_dir, name)
-        # min-key collision guard (ADVICE r8): the repartition-by-key
-        # contract means one partition per min key; if another partition
-        # already produced this shard NAME with different bytes, raising
-        # beats silently clobbering it. Identical bytes = our own retried
-        # attempt (or a deterministic re-run) — the replace stays
-        # idempotent for task retries.
-        if os.path.exists(target):
-            with open(target, "rb") as fh:
-                if fh.read() != data:
-                    raise RuntimeError(
-                        f"webdataset shard-name collision on {name}: two "
-                        "partitions share the same min key — repartition "
-                        "the input by the key column (one partition per "
-                        "shard) before write_wds_shards"
-                    )
-        tmp = os.path.join(out_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, target)
+        with attempt_file(out_dir, name) as tmp:
+            with open(tmp, "wb") as f:
+                f.write(data)
+            try:
+                os.link(tmp, os.path.join(out_dir, name))
+            except FileExistsError:
+                # min-key collision guard (ADVICE r8): the
+                # repartition-by-key contract means one partition per min
+                # key, so a shard of this NAME with other bytes is another
+                # partition's and raising beats clobbering it. Identical
+                # bytes are a retried attempt or a deterministic re-run.
+                with open(os.path.join(out_dir, name), "rb") as fh:
+                    if fh.read() != data:
+                        raise RuntimeError(
+                            f"webdataset shard-name collision on {name}: "
+                            "two partitions share the same min key — "
+                            "repartition the input by the key column (one "
+                            "partition per shard) before write_wds_shards"
+                        ) from None
+            # the shard holds these bytes now, so publish's rename changes
+            # nothing (onto its own hard link it is a no-op); its sweep
+            # removes this attempt's tmp file and those killed attempts left
+            publish(tmp, out_dir, name)
         yield pd.DataFrame({"file": [name], "n_samples": [len(rows)]})
 
     return df.mapInPandas(sink, schema="file string, n_samples long")

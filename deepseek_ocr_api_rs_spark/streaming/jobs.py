@@ -640,7 +640,7 @@ def extraction_stream_to_snapshots(
                 mode="append",
                 # per-file warc_ts min/max in the manifest: time-range
                 # reads over the snapshot table prune whole files on the
-                # driver (same pass as the row count, no extra scan)
+                # driver
                 stats_cols=["warc_ts"],
                 metrics={
                     "epoch_id": epoch_id,

@@ -260,3 +260,24 @@ def test_retried_bucket_task_leaves_one_file_and_one_row(spark, corpus_path, tmp
     assert [r["bucket"] for r in manifest] == [2]
     assert manifest[0]["n_docs"] == data.num_rows == second[0].n_docs > 0
     assert _tmp_files(out) == [] and _tmp_files(ckpt) == []
+
+
+def test_input_with_no_rows_is_committed(spark, corpus_path, tmp_path):
+    """When a filter leaves no input row, AQE drops the empty exchange and
+    no task runs; every bucket still gets its manifest row, so the rerun
+    starts no Spark job."""
+    docs = spark.read.parquet(corpus_path).limit(50).filter(F.col("lang") == "no-such-lang")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    assert run_resumable_extraction(spark, docs, out, ckpt, n_buckets=4) == 4
+    rows = read_manifest(ckpt).to_pylist()
+    assert sorted(r["bucket"] for r in rows) == list(range(4))
+    assert {r["n_docs"] for r in rows} == {0}
+    sc = spark.sparkContext
+    group = "test_input_with_no_rows_is_committed"
+    sc.setJobGroup(group, group)
+    try:
+        done = run_resumable_extraction(spark, docs, out, ckpt, n_buckets=4)
+    finally:
+        sc.setJobGroup("", "")
+    assert done == 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0

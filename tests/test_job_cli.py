@@ -43,7 +43,8 @@ def test_job_end_to_end_and_resume(tmp_path, corpus_path):
 
 def test_job_snapshot_table_commit(tmp_path, corpus_path, spark):
     """--snapshot-table commits the run output as an atomic versioned
-    snapshot with run metrics in the manifest lineage."""
+    snapshot with run metrics in the manifest lineage; a rerun adds a
+    version equal to the output, not a second copy of it."""
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     table = str(tmp_path / "snaptbl")
@@ -69,6 +70,15 @@ def test_job_snapshot_table_commit(tmp_path, corpus_path, spark):
     h = history(table)
     assert h[0]["metrics"]["run_id"] == "snap1"
     assert h[0]["metrics"]["n_docs"] == 300
+
+    r = subprocess.run(cmd, capture_output=True, text=True, timeout=600, cwd=REPO, env=env)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "0 buckets this run" in r.stdout, r.stdout
+    assert f"snapshot committed: {table} v2" in r.stdout, r.stdout
+    assert read_snapshot(spark, table).count() == 300
+    h = history(table)
+    assert [e["n_rows"] for e in h] == [300, 300]
+    assert h[0]["metrics"]["buckets_this_run"] == 0
 
 
 def test_job_snapshot_maintenance_flags(tmp_path, corpus_path, spark):

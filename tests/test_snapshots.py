@@ -830,3 +830,116 @@ def test_manual_delete_keys_carries_stream_marker(spark, tmp_path):
     )
     assert "stream_max_epoch" not in read_manifest(t)["metrics"]
     assert last_stream_epoch(t) == 4  # found via the parent walk
+
+
+def _table_files(t):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), t)
+        for d, _, fs in os.walk(t)
+        for f in fs
+        if not os.path.relpath(d, t).startswith("_snapshots")
+    )
+
+
+def test_noop_commits_leave_no_file(spark, tmp_path):
+    """A delete_keys of no keys and a delete_where that matches no row
+    publish nothing, and remove the files they wrote."""
+    from deepseek_ocr_api_rs_spark.sources.snapshots import (
+        delete_keys,
+        delete_where,
+    )
+
+    t = str(tmp_path / "tbl")
+    v0 = write_snapshot(_df(spark, 0, 20), t)
+    before = _table_files(t)
+    assert delete_keys(spark, t, spark.createDataFrame([], "id long"), "id") == v0
+    assert delete_where(spark, t, "id > 1000") == v0
+    assert _table_files(t) == before
+    assert current_version(t) == v0
+
+
+def test_write_snapshot_runs_one_job(spark, tmp_path):
+    """The rows of a commit are counted from the footers of the files it
+    wrote, so a write_snapshot without stats_cols is its write job alone."""
+    t = str(tmp_path / "tbl")
+    sc = spark.sparkContext
+    group = "test_write_snapshot_runs_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        v = write_snapshot(_df(spark, 0, 10), t)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert read_manifest(t, v)["n_rows"] == 10
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys, uuid
+from pyspark import TaskContext
+from deepseek_ocr_api_rs_spark.conf import build_session
+from deepseek_ocr_api_rs_spark.sources import snapshots as S
+
+root = sys.argv[1]
+marks = os.path.join(root, "faults")
+os.makedirs(marks)
+spark = build_session(master="local[4,2]", shuffle_partitions=4)
+
+
+def udf(fail):
+    def f(x):
+        ctx = TaskContext.get()
+        if fail and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            open(os.path.join(marks, uuid.uuid4().hex), "w").close()
+            raise RuntimeError("injected fault")
+        return x
+    return f
+
+
+spark.udf.register("flaky", udf(True), "long")
+spark.udf.register("steady", udf(False), "long")
+out = {}
+for fn in ("steady", "flaky"):
+    t = os.path.join(root, fn)
+    for lo in (0, 40):
+        S.write_snapshot(
+            spark.range(lo, lo + 40, numPartitions=4).selectExpr("id", f"{fn}(id * 2) as v"), t
+        )
+    S.delete_where(spark, t, f"{fn}(id) % 7 = 0")
+    upd = spark.range(0, 20, numPartitions=4).selectExpr(f"{fn}(id) * 3 as id", "0L as v")
+    S.merge_into(spark, t, upd, "id")
+    out[fn] = {
+        "log": [
+            [m["n_rows"], m["operation"]]
+            for m in (S.read_manifest(t, v) for v in range(1, S.current_version(t) + 1))
+        ],
+        "rows": sorted(tuple(r) for r in S.read_snapshot(spark, t).collect()),
+    }
+out["faults"] = len(os.listdir(marks))
+print(json.dumps(out))
+spark.stop()
+"""
+
+
+def test_commits_under_task_retries_equal_fault_free_run(tmp_path):
+    """Under local[4,2], a UDF that fails attempt 0 of partition 0 in the
+    data path of write_snapshot, delete_where and merge_into makes each
+    retry a task; the manifests' n_rows and operation strings, and the
+    rows, equal those of the same commits without faults."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path)],
+        capture_output=True, text=True, timeout=600, cwd=repo,
+        env=dict(os.environ, PYTHONPATH=repo),
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    # one fault per stage that ran the UDF: both appends, the delete's
+    # rewrite and the merge's updates
+    assert out["faults"] >= 4
+    assert out["flaky"] == out["steady"]
+    ops = [op for _, op in out["steady"]["log"]]
+    assert ops[:2] == ["append", "append"]
+    assert ops[2].startswith("delete(") and ops[3].startswith("merge(")

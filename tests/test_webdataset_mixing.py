@@ -172,3 +172,25 @@ def test_wds_shard_name_collision_and_key_length_guards(spark, tmp_path):
     )
     with _pytest.raises(Exception, match="USTAR"):
         write_wds_shards(long, str(tmp_path / "wds2")).collect()
+
+
+def test_wds_shard_sink_leaves_no_tmp_file(spark, tmp_path):
+    """The shard sink publishes through the shared sink contract: a tmp
+    file a killed attempt left is removed when the shard is published,
+    and a collision removes the raising attempt's own tmp file."""
+    import os
+
+    from deepseek_ocr_api_rs_spark.sources.webdataset import (
+        write_wds_shards,
+    )
+
+    d = tmp_path / "wds"
+    d.mkdir()
+    (d / ".shard-k1.tar.987654.tmp").write_bytes(b"partial")
+    one = spark.createDataFrame([("k1", "a")], "key string, txt string")
+    write_wds_shards(one, str(d)).collect()
+    assert sorted(os.listdir(d)) == ["shard-k1.tar"]
+    other = spark.createDataFrame([("k1", "b")], "key string, txt string")
+    with pytest.raises(Exception, match="collision"):
+        write_wds_shards(other, str(d)).collect()
+    assert sorted(os.listdir(d)) == ["shard-k1.tar"]
