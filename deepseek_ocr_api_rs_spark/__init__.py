@@ -26,6 +26,15 @@ Spark pipeline over Common-Crawl-style page tables:
   windowed aggregation.
 """
 
+import sys
+
 __version__ = "0.1.0"
 
 SCHEMA_VERSION = 2
+
+# Only PySpark Python workers have ``pyspark.worker`` loaded (the daemon
+# imports it before it forks them); the driver and the server do not.
+if "pyspark.worker" in sys.modules:
+    from deepseek_ocr_api_rs_spark.zipstamp import install
+
+    install()

@@ -106,7 +106,9 @@ def main(argv: list[str] | None = None) -> int:
         f"extraction complete: {n} docs, {n_buckets_done} buckets this run, "
         f"{dt:.1f}s ({n / max(dt, 1e-9):.0f} docs/sec)"
     )
-    metrics = extraction_metrics(out)
+    # one evaluation of the rollup feeds both the metrics table and the print
+    rollup = extraction_metrics(out)
+    metrics = spark.createDataFrame(rollup.collect(), rollup.schema)
     if args.metrics_path:
         from pyspark.sql import functions as F
 

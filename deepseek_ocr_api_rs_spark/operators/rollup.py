@@ -128,65 +128,26 @@ def refresh_hourly_rollup(
             json.dump(per_date, f)
         if snapshot_log:
             from deepseek_ocr_api_rs_spark.sources.snapshots import (
+                _footer_rows,
                 _publish,
-                current_version,
-                read_manifest,
             )
 
             # catalog-style commit: the manifest lists exactly the LIVE
             # dates' files; retracted dates are simply absent (their files
             # stay on disk as invisible orphans — GC's job, not the
             # refresh's)
-            files = sorted(
-                os.path.join("rollup", f"date={d}", name)
-                for d in per_date
-                for name in os.listdir(os.path.join(rollup_dir, f"date={d}"))
-                if name.endswith(".parquet")
-            )
-            # n_rows stays O(changed dates): count ONLY the rewritten
-            # partitions and carry per-date counts forward in the manifest
-            # metrics — a full-table count here would defeat the
-            # incremental-refresh design the operator exists for
-            prev_counts: dict[str, int] = {}
-            if current_version(out_dir) is not None:
-                prev_counts = read_manifest(out_dir).get("metrics", {}).get(
-                    "rollup_rows_per_date", {}
+            date_files = {
+                d: sorted(
+                    os.path.join("rollup", f"date={d}", name)
+                    for name in os.listdir(os.path.join(rollup_dir, f"date={d}"))
+                    if name.endswith(".parquet")
                 )
-            if changed:
-                changed_counts = {
-                    str(r.date): r.n
-                    for r in spark.read.option(
-                        "basePath", rollup_dir
-                    )
-                    .parquet(
-                        *(os.path.join(rollup_dir, f"date={d}") for d in changed)
-                    )
-                    .groupBy("date")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-            else:
-                changed_counts = {}
-            rollup_rows = {
-                d: changed_counts.get(d, prev_counts.get(d))
                 for d in per_date
             }
-            if any(v is None for v in rollup_rows.values()):
-                # migration fallback (pre-existing table without per-date
-                # counts): one full count, after which refreshes stay
-                # incremental
-                missing = [d for d, v in rollup_rows.items() if v is None]
-                fallback = {
-                    str(r.date): r.n
-                    for r in spark.read.option("basePath", rollup_dir)
-                    .parquet(
-                        *(os.path.join(rollup_dir, f"date={d}") for d in missing)
-                    )
-                    .groupBy("date")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-                rollup_rows.update(fallback)
+            files = sorted(f for fs in date_files.values() for f in fs)
+            # per-date rows from the footers of the listed files: exact,
+            # and no Spark job
+            rollup_rows = {d: _footer_rows(out_dir, fs) for d, fs in date_files.items()}
             _publish(
                 out_dir,
                 {

@@ -10,7 +10,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_job_end_to_end_and_resume(tmp_path, corpus_path):
+def test_job_end_to_end_and_resume(tmp_path, corpus_path, spark):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     metrics = str(tmp_path / "metrics")
@@ -39,6 +39,16 @@ def test_job_end_to_end_and_resume(tmp_path, corpus_path):
 
     m = duckdb.sql(f"select count(*) n from '{metrics}/*.parquet'").df()
     assert int(m.n[0]) >= 3  # html/pdf/error rollup rows per run
+
+    # each run appended the rollup of the same output
+    from deepseek_ocr_api_rs_spark.operators.extract import extraction_metrics
+
+    written = spark.read.parquet(metrics)
+    assert {r.run_id for r in written.select("run_id").collect()} == {"t1"}
+    want = extraction_metrics(spark.read.parquet(out)).collect()
+    assert sorted(map(tuple, written.drop("run_id").collect())) == sorted(
+        map(tuple, 2 * want)
+    )
 
 
 def test_job_snapshot_table_commit(tmp_path, corpus_path, spark):

@@ -20,6 +20,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from deepseek_ocr_api_rs_spark.extraction import pdf_real
 from deepseek_ocr_api_rs_spark.extraction.batch import extract_columns
 from deepseek_ocr_api_rs_spark.extraction.pdf_real import (
     _Cursor,
@@ -162,28 +163,79 @@ def test_cursor_answers_find_after_any_earlier_query(parts):
             assert cursor(pos) == data.find(b"ab", pos), (data, first, pos)
 
 
-@pytest.mark.parametrize("unit", [b"1 0 obj\n", b"1"], ids=["bare-heads", "digit-run"])
-def test_object_scan_is_linear(unit):
+def _repeated(unit: bytes, kb: int) -> bytes:
+    return b"%PDF-1.4\n" + unit * (kb * 1024 // len(unit))
+
+
+def _best_time(data: bytes, runs: int = 5) -> float:
+    # collector passes scan every live object of the test session,
+    # which is no cost of the scan itself (timeit disables it too)
+    best = float("inf")
+    gc.disable()
+    try:
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            extract_columns([data])
+            best = min(best, time.perf_counter() - t0)
+    finally:
+        gc.enable()
+    return best
+
+
+def _scanned_bytes(data: bytes, cursor: type = _Cursor) -> int:
+    """Bytes the scan's cursors search in one extraction of ``data``: from
+    each search's start to its hit, or to the end of the data."""
+    scanned = 0
+
+    class Counting(cursor):
+        def __init__(self, find) -> None:
+            def counted(pos: int) -> int:
+                nonlocal scanned
+                hit = find(pos)
+                scanned += (len(data) if hit < 0 else hit) - pos
+                return hit
+
+            super().__init__(counted)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pdf_real, "_Cursor", Counting)
+        extract_columns([data])
+    return scanned
+
+
+class _Researching(_Cursor):
+    """A cursor that searches afresh on every call, as the scan did before
+    the cursors."""
+
+    __slots__ = ()
+
+    def __call__(self, pos: int) -> int:
+        return self._find(pos)
+
+
+def _each_doubling_within(costs: list, factor: float = 2.5) -> bool:
+    return all(big <= factor * small for small, big in zip(costs, costs[1:]))
+
+
+@pytest.mark.parametrize(
+    ("unit", "measure"),
+    [(b"1 0 obj\n", _scanned_bytes), (b"1", _best_time)],
+    ids=["bare-heads", "digit-run"],
+)
+def test_object_scan_is_linear(unit, measure):
     """Each doubling of the input may cost at most 2.5x. Before the
     cursors, bare heads cost ~4.2x per doubling; before the (?<!\\d)
-    anchor, a 16 KB digit run took 6 s and each doubling ~4.5x."""
+    anchor, a 16 KB digit run took 6 s and each doubling ~4.5x. Bare heads
+    are measured in bytes searched, which box load cannot change; the digit
+    run costs inside one regex search, so it is timed."""
+    costs = [measure(_repeated(unit, kb)) for kb in (32, 64, 128, 256)]
+    assert _each_doubling_within(costs), costs
 
-    def best_of(data: bytes, runs: int = 5) -> float:
-        # collector passes scan every live object of the test session,
-        # which is no cost of the scan itself (timeit disables it too)
-        best = float("inf")
-        gc.disable()
-        try:
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                extract_columns([data])
-                best = min(best, time.perf_counter() - t0)
-        finally:
-            gc.enable()
-        return best
 
-    times = [
-        best_of(b"%PDF-1.4\n" + unit * (kb * 1024 // len(unit))) for kb in (32, 64, 128, 256)
+def test_scanned_bytes_catch_a_cursor_that_researches():
+    # an eighth of the sizes above: the quadratic scan of 256 KB takes seconds
+    costs = [
+        _scanned_bytes(_repeated(b"1 0 obj\n", kb), cursor=_Researching)
+        for kb in (4, 8, 16, 32)
     ]
-    for small, big in zip(times, times[1:]):
-        assert big <= 2.5 * small, times
+    assert not _each_doubling_within(costs), costs

@@ -153,3 +153,22 @@ def test_legacy_count_only_manifest_migrates(spark, tmp_path):
     rep2 = refresh_hourly_rollup(spark, events, out)
     assert rep2["refreshed_dates"] == []
     _assert_equals_batch(spark, read_rollup(spark, out), events)
+
+
+def test_snapshot_commit_starts_no_spark_job(spark, tmp_path):
+    """The ``snapshot_log=True`` commit counts its rows from the footers of
+    the files it lists, so the refresh runs the jobs of the plain one."""
+    events = spark.read.parquet(f"{SF}/events.parquet")
+    sc = spark.sparkContext
+    jobs = {}
+    for snapshot_log in (False, True):
+        group = f"rollup-commit-{snapshot_log}"
+        sc.setJobGroup(group, group)
+        try:
+            refresh_hourly_rollup(
+                spark, events, str(tmp_path / str(snapshot_log)), snapshot_log=snapshot_log
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[snapshot_log] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[True] == jobs[False] > 0, jobs

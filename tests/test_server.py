@@ -172,15 +172,18 @@ def test_recipe_selection_and_unknown_recipe(server):
 
 def test_server_imports_neither_pandas_nor_pyarrow():
     """The server reads the kernel's plain columns, so its process never
-    pays the pandas/pyarrow import (about 0.45 s of a 0.73 s set-up)."""
+    pays the pandas/pyarrow import (about 0.45 s of a 0.73 s set-up). It
+    runs outside Spark, so it has no pyspark and keeps the stdlib
+    ``zipimporter.invalidate_caches``."""
     probe = (
-        "import sys, deepseek_ocr_api_rs_spark.server.app; "
-        "print(sorted(m for m in ('pandas', 'pyarrow') if m in sys.modules))"
+        "import sys, zipimport, deepseek_ocr_api_rs_spark.server.app; "
+        "print(sorted(m for m in ('pandas', 'pyarrow', 'pyspark') if m in sys.modules), "
+        "zipimport.zipimporter.invalidate_caches.__module__)"
     )
     out = subprocess.run(
         [sys.executable, "-c", probe], capture_output=True, text=True, check=True
     )
-    assert out.stdout.strip() == "[]", out.stdout
+    assert out.stdout.strip() == "[] zipimport", out.stdout
 
 
 # sha256 over the response bodies of 400 eight-page requests per seed,
