@@ -20,10 +20,13 @@ Spark pipeline over Common-Crawl-style page tables:
   ``pyspark.sql.functions`` (JVM-side) wherever expressible.
 - ``fixtures``    — deterministic synthetic corpus generator + golden
   capture (analogue of ``baselines/`` in the reference).
-- ``sources``     — parquet/Iceberg-shaped IO plus the ``_metrics`` /
-  ``_checkpoints`` side tables.
-- ``streaming``   — Structured Streaming ingestion with watermarked
-  windowed aggregation.
+- ``sources``     — the pages-table reader, WARC/WET/WAT/CDX and
+  WebDataset codecs, the task-side publish contract (``sink``) that the
+  job's bucket files and ``_checkpoints`` manifest rows go through, and an
+  Iceberg-style snapshot log on plain parquet (``snapshots``).
+- ``streaming``   — Structured Streaming jobs: watermarked windowed
+  aggregation, sessions, stream-stream joins, cross-batch dedup, and the
+  extraction stage on a stream.
 """
 
 import sys

@@ -75,8 +75,12 @@ def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
     from deepseek_ocr_api_rs_spark.conf import build_session
     from deepseek_ocr_api_rs_spark.operators import checkpoint
-    from deepseek_ocr_api_rs_spark.operators.extract import extraction_metrics
+    from deepseek_ocr_api_rs_spark.operators.extract import (
+        EXTRACT_OUTPUT_SCHEMA,
+        extraction_metrics,
+    )
     from deepseek_ocr_api_rs_spark.sources.io import read_documents
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     spark = build_session(
         app_name="extraction-job",
@@ -101,7 +105,12 @@ def main(argv: list[str] | None = None) -> int:
     dt = time.time() - t0
     # each task counted the rows it wrote into its bucket's manifest row
     n = sum(checkpoint.read_manifest(args.checkpoint_dir).column("n_docs").to_pylist())
-    out = spark.read.parquet(args.output)
+    # the known schema reads an output whose buckets are all empty (no
+    # data file, no directory) as an empty frame instead of raising
+    os.makedirs(args.output, exist_ok=True)
+    out = spark.read.schema(
+        StructType(EXTRACT_OUTPUT_SCHEMA.fields + [StructField("bucket", IntegerType())])
+    ).parquet(args.output)
     print(
         f"extraction complete: {n} docs, {n_buckets_done} buckets this run, "
         f"{dt:.1f}s ({n / max(dt, 1e-9):.0f} docs/sec)"

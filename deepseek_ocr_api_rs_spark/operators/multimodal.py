@@ -1,8 +1,7 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
-Image/audio/video bytes are carried as ``binary`` columns; decode /
-feature-extract / resize / frame-sample run as Arrow-batched pandas UDFs
-over ``mapInPandas``.
+Image/audio/video bytes are carried as ``binary`` columns; image decode
+and resize run as Arrow-batched pandas UDFs over ``mapInPandas``.
 
 The image HEADER decode is REAL (stdlib struct/zlib — PNG IHDR, JPEG SOF
 marker scan, GIF logical screen descriptor, BMP BITMAPINFOHEADER, TIFF
@@ -15,7 +14,7 @@ palette DIB rows; TIFF — strip LZW/PackBits + predictor
 (extraction/tiff.py). ``resize_png_payloads`` runs the reference's 22-bit
 fixed-point bicubic resize (crates/infer-deepseek/src/vision/resample.rs)
 on the decoded rasters; real audio (RIFF/WAVE + numpy FFT) lives in
-operators/audio.py. Nothing in the image path is stubbed anymore — the
+operators/audio.py and video frame sampling in operators/video.py. Nothing in the image path is stubbed anymore — the
 Spark-side plumbing (schema, batching, partitioning, UDF signature) and
 the decoding are both real, which is what has to hold at 100 TB.
 """
@@ -286,49 +285,6 @@ def make_tiff_bytes(width: int, height: int) -> bytes:
     )
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("out_width", IntegerType()),
-        StructField("out_height", IntegerType()),
-    ]
-)
-
-
-def resize_images(
-    docs: DataFrame,
-    max_side: int = 640,
-    id_col: str = "doc_id",
-    binary_col: str = "payload",
-) -> DataFrame:
-    """Resize stage plumbing (P1 letterbox analogue): computes the target
-    dims with the reference's min-side-ratio rule over the (fake-decoded)
-    source dims; the pixel work is the stubbed part. Arrow-batched,
-    vectorized numpy arithmetic — the exact shape a real resize UDF has."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            _, w, h, _mode = _decode_dims_batch(list(pdf[binary_col]))
-            scale = np.minimum(max_side / np.maximum(w, 1), max_side / np.maximum(h, 1))
-            scale = np.minimum(scale, 1.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "width": w,
-                    "height": h,
-                    # banker's rounding — the P1 round_ties_to_even rule
-                    "out_width": np.rint(w * scale).astype(np.int32),
-                    "out_height": np.rint(h * scale).astype(np.int32),
-                }
-            )
-
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.col(binary_col).alias(binary_col)
-    ).mapInPandas(process, schema=RESIZED_SCHEMA)
-
-
 PNG_RESIZE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -480,92 +436,6 @@ def resize_png_payloads(
     return docs.select(
         F.col(id_col).alias("doc_id"), F.col(binary_col).alias(binary_col)
     ).mapInPandas(process, schema=PNG_RESIZE_SCHEMA)
-
-
-FRAME_SAMPLE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("byte_offset", LongType()),
-    ]
-)
-
-
-def sample_frames(
-    docs: DataFrame,
-    n_frames: int = 4,
-    id_col: str = "doc_id",
-    binary_col: str = "payload",
-) -> DataFrame:
-    """Video frame sampling plumbing: one row per sampled frame (the P6
-    temporal-tiling analogue — preprocess.rs:207-217). The frame decode is
-    the stubbed part; offsets are the deterministic uniform-stride rule a
-    real sampler uses. Output is a fan-out (doc → n_frames rows) — the
-    schema/explode shape that matters at scale."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, offs = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[binary_col]):
-                n = len(payload) if payload is not None else 0
-                if n == 0:
-                    continue
-                k = min(n_frames, n)
-                for j in range(k):
-                    ids.append(int(doc_id))
-                    idxs.append(j)
-                    offs.append((j * n) // k)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "byte_offset": offs}
-            )
-
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.col(binary_col).alias(binary_col)
-    ).mapInPandas(process, schema=FRAME_SAMPLE_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("duration_s", IntegerType()),
-        StructField("energy", LongType()),
-    ]
-)
-
-
-def audio_features(
-    docs: DataFrame, id_col: str = "doc_id", binary_col: str = "payload"
-) -> DataFrame:
-    """Audio feature-extraction plumbing: deterministic per-payload numeric
-    features (real impl would run an FFT/VAD over decoded samples — no
-    audio libs in this container). The byte-sum 'energy' is computed with
-    vectorized numpy over the Arrow buffer — the batch shape is real."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_bytes, energy = [], []
-            for payload in pdf[binary_col]:
-                if payload is None:
-                    n_bytes.append(0)
-                    energy.append(0)
-                    continue
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                n_bytes.append(arr.size)
-                energy.append(int(arr.sum()))
-            nb = np.asarray(n_bytes, dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "n_bytes": nb,
-                    "duration_s": (nb // 16000 + 1).astype(np.int32),  # fake 16kHz
-                    "energy": np.asarray(energy, dtype=np.int64),
-                }
-            )
-
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.col(binary_col).alias(binary_col)
-    ).mapInPandas(process, schema=AUDIO_FEATURES_SCHEMA)
 
 
 def image_metadata(docs: DataFrame, id_col: str = "doc_id", binary_col: str = "payload") -> DataFrame:

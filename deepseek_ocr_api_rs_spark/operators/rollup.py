@@ -29,7 +29,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,7 +67,6 @@ def refresh_hourly_rollup(
     spark: SparkSession,
     events: DataFrame,
     out_dir: str,
-    snapshot_log: bool = False,
 ) -> dict:
     """Refresh the rollup at ``out_dir`` from the current ``events`` table.
 
@@ -77,20 +75,10 @@ def refresh_hourly_rollup(
     dates were not recomputed and retracted dates were dropped. Never
     silent: the returned accounting IS the log.
 
-    Retraction substrate: with ``snapshot_log=False`` retracted date
-    partitions are deleted with a driver-side directory remove — the
-    plain-local-parquet stand-in for what is a CATALOG-level delete on a
-    real table format (Iceberg/Delta drop data files from the next
-    snapshot's manifest; the files themselves are pruned later by GC).
-    ``snapshot_log=True`` does it the catalog way via sources.snapshots:
-    every refresh publishes a manifest listing exactly the live partition
-    files, a retraction is a manifest that omits the retracted date (no
-    physical delete — the files become invisible orphans), and
-    ``read_rollup_snapshot`` resolves through the manifest. Note dynamic
-    partition overwrite rewrites files IN PLACE, so older snapshot versions
-    of a *changed* date are not time-travelable on this substrate (a real
-    catalog writes new files per commit); the manifest's value here is
-    atomic visibility + retraction-without-delete + lineage metrics.
+    Retracted date partitions are deleted with a driver-side directory
+    remove — the plain-local-parquet stand-in for what is a CATALOG-level
+    delete on a real table format (Iceberg/Delta drop data files from the
+    next snapshot's manifest; the files themselves are pruned later by GC).
     """
     manifest_path = os.path.join(out_dir, "_rollup_manifest.json")
     prev: dict[str, dict] = {}
@@ -118,50 +106,13 @@ def refresh_hourly_rollup(
             .option("partitionOverwriteMode", "dynamic")
             .parquet(rollup_dir)
         )
-    if not snapshot_log:
-        for d in deleted:
-            part_dir = os.path.join(rollup_dir, f"date={d}")
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
+    for d in deleted:
+        part_dir = os.path.join(rollup_dir, f"date={d}")
+        if os.path.isdir(part_dir):
+            shutil.rmtree(part_dir)
     if changed or deleted:
         with open(manifest_path, "w") as f:
             json.dump(per_date, f)
-        if snapshot_log:
-            from deepseek_ocr_api_rs_spark.sources.snapshots import (
-                _footer_rows,
-                _publish,
-            )
-
-            # catalog-style commit: the manifest lists exactly the LIVE
-            # dates' files; retracted dates are simply absent (their files
-            # stay on disk as invisible orphans — GC's job, not the
-            # refresh's)
-            date_files = {
-                d: sorted(
-                    os.path.join("rollup", f"date={d}", name)
-                    for name in os.listdir(os.path.join(rollup_dir, f"date={d}"))
-                    if name.endswith(".parquet")
-                )
-                for d in per_date
-            }
-            files = sorted(f for fs in date_files.values() for f in fs)
-            # per-date rows from the footers of the listed files: exact,
-            # and no Spark job
-            rollup_rows = {d: _footer_rows(out_dir, fs) for d, fs in date_files.items()}
-            _publish(
-                out_dir,
-                {
-                    "files": files,
-                    "n_rows": int(sum(rollup_rows.values())),
-                    "committed_ts": time.time(),
-                    "operation": "rollup_refresh",
-                    "metrics": {
-                        "refreshed_dates": changed,
-                        "deleted_dates": deleted,
-                        "rollup_rows_per_date": rollup_rows,
-                    },
-                },
-            )
     return {
         "refreshed_dates": changed,
         "skipped_dates": len(per_date) - len(changed),
@@ -172,19 +123,3 @@ def refresh_hourly_rollup(
 def read_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, "rollup"))
 
-
-def read_rollup_snapshot(
-    spark: SparkSession, out_dir: str, version: int | None = None
-) -> DataFrame:
-    """Manifest-resolved read of a ``snapshot_log=True`` rollup: only the
-    files the (given or latest) snapshot lists are visible — a physically
-    present but retracted partition does NOT appear. ``basePath`` keeps the
-    ``date=`` partition column recoverable from leaf-file paths."""
-    from deepseek_ocr_api_rs_spark.sources.snapshots import read_manifest
-
-    m = read_manifest(out_dir, version)
-    paths = [os.path.join(out_dir, f) for f in m["files"]]
-    return (
-        spark.read.option("basePath", os.path.join(out_dir, "rollup"))
-        .parquet(*paths)
-    )

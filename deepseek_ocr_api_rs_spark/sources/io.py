@@ -1,10 +1,13 @@
 """Table IO (reference §2.1 S10 sink: the JSON response → here, the output
 table).
 
-Iceberg is the production target (atomic appends, snapshot-based resume);
-this container has no Iceberg runtime, so the layer is format-gated: the
-same call sites run parquet here and ``writeTo(...).append()`` when an
-Iceberg catalog is configured.
+``read_documents`` is the job's scan of the pages table. The job does not
+write through this module: each bucket task publishes its own parquet file
+through ``sources.sink``, and ``job.py --snapshot-table`` commits the
+output through ``sources.snapshots``. ``write_table`` is a standalone
+writer: a path gets a parquet write, a table identifier gets
+``writeTo(...).append()`` into a configured catalog (Iceberg in
+production; no Iceberg runtime exists in this container).
 """
 
 from __future__ import annotations
@@ -18,8 +21,8 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
-    """Scan of the pages table. Explicit schema projection keeps ReadSchema
-    minimal even when callers forget to select."""
+    """Scan of the pages table (parquet). Callers select the columns they
+    need; the scan reads only those."""
     return spark.read.parquet(path)
 
 

@@ -113,24 +113,6 @@ def read_manifest(table_dir: str, version: int | None = None) -> dict:
         return json.load(f)
 
 
-def _with_marker(table_dir: str, metrics: dict) -> dict:
-    """``metrics`` with the table's stream-epoch marker carried forward:
-    a commit that does not itself advance ``stream_max_epoch`` stamps the
-    newest one (its own pre-r5 ``epoch_id`` counts too). Without the
-    carry, a batch commit on a stream table followed by
-    ``expire_snapshots`` strands the dedup walk (code-review r5). A CDC
-    batch's mid-epoch commit (``cdc_epoch``) withholds the marker on
-    purpose, so that a crash before its append replays the epoch."""
-    if "stream_max_epoch" in metrics or "cdc_epoch" in metrics:
-        return metrics
-    cands = [
-        int(x)
-        for x in (metrics.get("epoch_id"), last_stream_epoch(table_dir))
-        if x is not None
-    ]
-    return {"stream_max_epoch": max(cands), **metrics} if cands else metrics
-
-
 def _publish(
     table_dir: str,
     manifest: dict,
@@ -162,18 +144,12 @@ def _publish(
                 "re-run the rewrite against the current version"
             )
         version = (cur or 0) + 1
-        # every retry derives from the CALLER's manifest, never the
-        # previous iteration's merged one — reusing the merged dict made
-        # the second iteration see its own carried stream_max_epoch and
-        # skip re-carrying from the NEW parent, publishing a regressed
-        # dedup marker after a lost race (code-review r5 pass 2)
         attempt = dict(manifest)
         if append:
             prev = read_manifest(table_dir, cur) if cur is not None else {}
             attempt.update(
                 files=prev.get("files", []) + manifest["files"],
                 n_rows=prev.get("n_rows", 0) + manifest["n_rows"],
-                metrics=_with_marker(table_dir, manifest.get("metrics", {})),
                 file_stats={
                     **prev.get("file_stats", {}),
                     **manifest.get("file_stats", {}),
@@ -473,17 +449,16 @@ def compact(
     table through ``n`` write tasks). ``target_files`` is the legacy
     knob: when given, the byte target is derived as total/target_files.
 
-    Many-small-appends is the natural failure mode of per-micro-batch
+    Many small appends are the natural failure mode of incremental
     commits (the 100 TB small-files problem); compaction restores scan
     efficiency WITHOUT breaking history — prior manifests still list the
     old files, which stay on disk until ``expire_snapshots`` reclaims
     them, so time travel across the compaction boundary keeps working. A
     concurrent commit landing between the read and the publish raises
     ``CommitConflict`` (compare-and-swap — a blind retry would erase the
-    concurrent writer's rows). A stream sink's ``stream_max_epoch``
-    marker is carried forward so epoch-replay dedup stays O(1) across
-    compactions. No-op (everything already ≥ target) returns the current
-    version unchanged. Returns the (possibly new) version."""
+    concurrent writer's rows). No-op (everything already ≥ target)
+    returns the current version unchanged. Returns the (possibly new)
+    version."""
     base_version, base = _rewrite_base(table_dir)
     rels = base["files"]
     if not rels:
@@ -563,15 +538,12 @@ def compact(
             },
             "operation": f"compact({len(rels)}->{len(all_files)})",
             "schema": base.get("schema"),
-            "metrics": _with_marker(
-                table_dir,
-                dict(
-                    metrics or {},
-                    files_before=len(rels),
-                    files_after=len(all_files),
-                    files_rewritten=len(small),
-                    files_passthrough=len(passthrough),
-                ),
+            "metrics": dict(
+                metrics or {},
+                files_before=len(rels),
+                files_after=len(all_files),
+                files_rewritten=len(small),
+                files_passthrough=len(passthrough),
             ),
         }
 
@@ -598,8 +570,7 @@ def delete_where(
     delete. History stays time-travelable (pre-delete versions keep
     their files until ``expire_snapshots``); a concurrent commit between
     the read and the publish raises ``CommitConflict`` (CAS); a
-    predicate matching zero rows publishes nothing. The
-    ``stream_max_epoch`` marker is carried forward. Returns the
+    predicate matching zero rows publishes nothing. Returns the
     (possibly new) version."""
     base_version, base = _rewrite_base(table_dir)
     rels = base["files"]
@@ -632,14 +603,11 @@ def delete_where(
                 f"delete({n_deleted} rows, {len(candidates)} files rewritten)"
             ),
             "schema": base.get("schema"),
-            "metrics": _with_marker(
-                table_dir,
-                dict(
-                    metrics or {},
-                    rows_deleted=n_deleted,
-                    files_rewritten=len(candidates),
-                    files_passthrough=len(untouched),
-                ),
+            "metrics": dict(
+                metrics or {},
+                rows_deleted=n_deleted,
+                files_rewritten=len(candidates),
+                files_passthrough=len(untouched),
             ),
         }
 
@@ -682,9 +650,9 @@ def delete_keys(
             + [{"file": rel, "key": key_col, "n_keys": n_keys,
                 "scope": base["files"]}],
             "operation": f"delete_keys({n_keys} keys)",
-            "metrics": _with_marker(table_dir, dict(
+            "metrics": dict(
                 metrics or {}, delete_batches=len(base.get("deletes", [])) + 1
-            )),
+            ),
         }
 
     keys = keys.select(key_col).distinct().coalesce(1)
@@ -761,14 +729,11 @@ def apply_deletes(
                 f"apply_deletes({len(deletes)} batches, "
                 f"{len(touched)} files rewritten)"
             ),
-            "metrics": _with_marker(
-                table_dir,
-                dict(
-                    metrics or {},
-                    delete_batches_applied=len(deletes),
-                    files_rewritten=len(touched),
-                    files_passthrough=len(untouched),
-                ),
+            "metrics": dict(
+                metrics or {},
+                delete_batches_applied=len(deletes),
+                files_rewritten=len(touched),
+                files_passthrough=len(untouched),
             ),
         }
 
@@ -792,8 +757,7 @@ def merge_into(
     passes through unrewritten with its stats. Duplicate keys in
     ``updates`` are the caller's contract to avoid (they insert as
     duplicates, exactly like a blind append would). History stays
-    time-travelable; CAS on publish; the ``stream_max_epoch`` marker is
-    carried forward. Returns the new version."""
+    time-travelable; CAS on publish. Returns the new version."""
     base_version, base = _rewrite_base(table_dir)
     rels = base["files"]
     stats = base.get("file_stats", {})
@@ -846,15 +810,12 @@ def merge_into(
                     f"{len(candidates)} files rewritten)"
                 ),
                 "schema": upd.schema.json(),
-                "metrics": _with_marker(
-                    table_dir,
-                    dict(
-                        metrics or {},
-                        rows_updated=n_matched,
-                        rows_inserted=n_upd - n_matched,
-                        files_rewritten=len(candidates),
-                        files_passthrough=len(untouched),
-                    ),
+                "metrics": dict(
+                    metrics or {},
+                    rows_updated=n_matched,
+                    rows_inserted=n_upd - n_matched,
+                    files_rewritten=len(candidates),
+                    files_passthrough=len(untouched),
                 ),
             }
 
@@ -863,31 +824,6 @@ def merge_into(
         )
     finally:
         upd.unpersist()
-
-
-def last_stream_epoch(table_dir: str) -> int | None:
-    """Newest committed stream-epoch marker, O(1) manifest reads on the
-    steady path: the stream sink stamps ``stream_max_epoch`` into every
-    manifest it publishes (and ``compact`` carries it forward), so the
-    CURRENT manifest answers directly; the parent walk only continues
-    across foreign commits that dropped the marker, stopping at the
-    first hit. Unlike a full ``history()`` scan, the marker survives
-    ``expire_snapshots`` — the current manifest always survives — so a
-    crash-replay of an epoch older than the retention horizon still
-    dedups (ADVICE r4). Pre-r5 manifests are read via their per-commit
-    ``epoch_id`` (epochs are monotone, so the newest marker is the max)."""
-    v = current_version(table_dir)
-    while v is not None:
-        try:
-            m = read_manifest(table_dir, v)
-        except FileNotFoundError:
-            return None
-        metrics = m.get("metrics", {})
-        e = metrics.get("stream_max_epoch", metrics.get("epoch_id"))
-        if e is not None:
-            return int(e)
-        v = m["parent"]
-    return None
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 2) -> dict:

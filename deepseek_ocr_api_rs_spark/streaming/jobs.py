@@ -2,9 +2,13 @@
 
 The reference streams decoded deltas over SSE (crates/server/src/stream.rs)
 — transport streaming of a per-request computation. The Spark-native
-restatement is corpus-level: documents/events arrive continuously, the
-engine maintains watermarked windowed aggregates and can run the extraction
-stage itself on a stream (readStream → mapInArrow → writeStream).
+restatement is corpus-level: documents/events arrive continuously, and the
+engine maintains watermarked windowed aggregates, sessions, stream-stream
+joins and cross-batch dedup state. ``extraction_stream`` runs the
+extraction stage itself on a stream (readStream → mapInArrow → parquet file
+sink, exactly once through the streaming checkpoint). Every sink here is a
+memory or parquet file sink; snapshot-table commits belong to the batch job
+(``job.py --snapshot-table``).
 
 Batch-equivalence: with Trigger.AvailableNow over static input, the final
 result of a streaming aggregation equals the batch group-by — which is what
@@ -580,172 +584,6 @@ def extraction_stream(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def extraction_stream_to_snapshots(
-    spark: SparkSession,
-    docs_path: str,
-    table_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Streaming extraction committing each micro-batch as a SNAPSHOT —
-    the north rule's "checkpoint manifests written to Iceberg" as a live
-    sink: readStream → Arrow extraction → ``foreachBatch`` → one atomic
-    snapshot-log commit per epoch, carrying extraction metrics (docs,
-    chars, accepted blocks) in the manifest for lineage.
-
-    Exactly-once composition: Spark's streaming checkpoint makes epoch
-    REPLAY the only duplicate source (a batch can rerun after a crash
-    between sink write and offset commit), so the sink is made IDEMPOTENT
-    per epoch — epoch ids are monotone, every stream commit stamps
-    ``stream_max_epoch`` into its manifest, and a replayed ``epoch_id ≤``
-    that marker is skipped after O(1) manifest reads
-    (``snapshots.last_stream_epoch``; the foreachBatch idempotent-sink
-    contract, same role as Iceberg's commit-dedup by checkpoint id). The
-    marker lives in the CURRENT manifest, so it survives
-    ``expire_snapshots`` — replaying an epoch older than the retention
-    horizon still dedups (ADVICE r4). Corollary of monotonicity: the
-    stream checkpoint and the table are a unit — pointing a FRESH
-    checkpoint (epochs restart at 0) at an existing table would skip
-    every batch; start a fresh table with a fresh checkpoint. Readers
-    see only committed manifests, never a half-written batch.
-    """
-    from deepseek_ocr_api_rs_spark.operators.extract import extract_documents
-    from deepseek_ocr_api_rs_spark.sources import snapshots as snap
-
-    schema = spark.read.parquet(docs_path).schema
-    stream = spark.readStream.schema(schema).parquet(docs_path)
-    extracted = extract_documents(stream)
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        last = snap.last_stream_epoch(table_dir)
-        if last is not None and epoch_id <= last:
-            return  # replayed epoch: already committed, skip (idempotence)
-        batch_df.persist()  # metrics agg + snapshot write: ONE extraction
-        try:
-            agg = batch_df.agg(
-                F.count("*").alias("n"),
-                F.sum("n_chars").alias("chars"),
-                F.sum("n_blocks_accepted").alias("acc"),
-            ).first()
-            if (agg.n or 0) == 0:
-                return
-            snap.write_snapshot(
-                batch_df,
-                table_dir,
-                mode="append",
-                # per-file warc_ts min/max in the manifest: time-range
-                # reads over the snapshot table prune whole files on the
-                # driver
-                stats_cols=["warc_ts"],
-                metrics={
-                    "epoch_id": epoch_id,
-                    "stream_max_epoch": epoch_id,  # monotone dedup marker
-                    "n_docs": int(agg.n),
-                    "total_chars": int(agg.chars or 0),
-                    "blocks_accepted": int(agg.acc or 0),
-                },
-            )
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        extracted.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def cdc_stream_to_snapshots(
-    spark: SparkSession,
-    changes_path: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "id",
-    op_col: str = "op",
-) -> None:
-    """CDC change stream → snapshot table via MERGE-ON-READ (r6): each
-    micro-batch of (op, key, payload…) rows commits as at most two
-    snapshot-log entries — an O(keys) scoped equality-delete batch for
-    EVERY changed key (delete-or-replace of the old row version), then
-    an append of the upsert rows. The delete's scope is the pre-batch
-    file set, so the freshly appended rows are untouched (the Iceberg v2
-    sequence-number rule); readers see the post-change table immediately
-    without any data-file rewrite, and maintenance (``apply_deletes`` +
-    ``compact``) materializes lazily.
-
-    Epoch idempotence composes with the crash model: the
-    ``stream_max_epoch`` marker is stamped only on the LAST commit of an
-    epoch (the append when upserts exist, else the delete batch). A
-    crash between the two commits replays the epoch; the re-run's
-    duplicate delete batch is semantically a no-op (same keys, same
-    still-current scope) and the append then lands exactly once.
-    ``op == 'delete'`` rows delete; every other op value upserts."""
-    from deepseek_ocr_api_rs_spark.sources import snapshots as snap
-
-    schema = spark.read.parquet(changes_path).schema
-    stream = spark.readStream.schema(schema).parquet(changes_path)
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        last = snap.last_stream_epoch(table_dir)
-        if last is not None and epoch_id <= last:
-            return  # replayed epoch: already fully committed
-        batch_df.persist()
-        try:
-            n = batch_df.count()
-            if n == 0:
-                return
-            # NULL op is "not delete" → upsert; a bare != would be NULL
-            # under three-valued logic, silently deleting the key while
-            # inserting nothing (code-review r6)
-            upserts = batch_df.filter(
-                F.coalesce(F.col(op_col) != "delete", F.lit(True))
-            ).drop(op_col)
-            n_up = upserts.count()
-            if snap.current_version(table_dir) is not None:
-                # NOTE: the delete batch must NOT carry "epoch_id" when
-                # an append is still due — last_stream_epoch's pre-r5
-                # fallback reads epoch_id as the marker, so a crash
-                # between the two commits would make the replay skip the
-                # epoch and permanently lose its upserts (code-review
-                # r6). "cdc_epoch" records lineage without being a
-                # marker key.
-                delete_metrics = {"cdc_epoch": epoch_id, "cdc_changes": n}
-                if n_up == 0:
-                    # delete-only epoch: the delete batch IS the last
-                    # commit — it carries the idempotence marker
-                    delete_metrics["stream_max_epoch"] = epoch_id
-                snap.delete_keys(
-                    spark,
-                    table_dir,
-                    batch_df.select(key_col),
-                    key_col,
-                    metrics=delete_metrics,
-                )
-            if n_up:
-                snap.write_snapshot(
-                    upserts,
-                    table_dir,
-                    mode="append",
-                    metrics={
-                        "epoch_id": epoch_id,
-                        "stream_max_epoch": epoch_id,
-                        "cdc_upserts": n_up,
-                        "cdc_deletes": n - n_up,
-                    },
-                )
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )

@@ -127,3 +127,33 @@ def test_job_snapshot_maintenance_flags(tmp_path, corpus_path, spark):
     m = read_manifest(table)
     assert m["operation"].startswith("compact(")
     assert read_snapshot(spark, table).count() == 300
+
+
+def test_job_with_no_input_rows_to_do(tmp_path):
+    """When no bucket still to do has an input row (a --langs filter that
+    matches nothing), the job commits every bucket with n_docs = 0 and
+    reads the empty output, on the first run and on the rerun."""
+    from deepseek_ocr_api_rs_spark.fixtures.corpus import write_documents_parquet
+    from deepseek_ocr_api_rs_spark.operators.checkpoint import read_manifest
+
+    docs = str(tmp_path / "docs.parquet")
+    write_documents_parquet(docs, 50)
+    ckpt = str(tmp_path / "ckpt")
+    cmd = [
+        sys.executable, "-m", "deepseek_ocr_api_rs_spark.job",
+        "--input", docs,
+        "--output", str(tmp_path / "out"),
+        "--checkpoint-dir", ckpt,
+        "--langs", "xx",
+        "--n-buckets", "4",
+        "--master", "local[2]",
+    ]
+    env = dict(os.environ, PYTHONPATH=REPO)
+    r1 = subprocess.run(cmd, capture_output=True, text=True, timeout=600, cwd=REPO, env=env)
+    assert r1.returncode == 0, r1.stderr[-2000:]
+    assert "extraction complete: 0 docs, 4 buckets this run" in r1.stdout, r1.stdout
+    assert read_manifest(ckpt).column("n_docs").to_pylist() == [0] * 4
+
+    r2 = subprocess.run(cmd, capture_output=True, text=True, timeout=600, cwd=REPO, env=env)
+    assert r2.returncode == 0, r2.stderr[-2000:]
+    assert "extraction complete: 0 docs, 0 buckets this run" in r2.stdout, r2.stdout

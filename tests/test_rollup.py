@@ -97,40 +97,6 @@ def test_removed_date_partition_is_deleted(spark, tmp_path):
     assert rep2["refreshed_dates"] == [] and rep2["deleted_dates"] == []
 
 
-def test_snapshot_log_retraction_is_catalog_level(spark, tmp_path):
-    """``snapshot_log=True``: a retraction is a MANIFEST that omits the
-    retracted date — the partition's files stay on disk (GC's job, like
-    Iceberg/Delta) but are invisible through the snapshot read path, and
-    the snapshot history records the retraction with metrics (lineage)."""
-    import os
-
-    from deepseek_ocr_api_rs_spark.operators.rollup import read_rollup_snapshot
-    from deepseek_ocr_api_rs_spark.sources.snapshots import history
-
-    out = str(tmp_path / "agg")
-    events = spark.read.parquet(f"{SF}/events.parquet")
-    refresh_hourly_rollup(spark, events, out, snapshot_log=True)
-    d0 = events.select(F.min(F.to_date("ts")).alias("d")).first().d
-    assert (
-        read_rollup_snapshot(spark, out)
-        .filter(F.col("date") == F.lit(d0)).count() > 0
-    )
-
-    remaining = events.filter(F.to_date("ts") != F.lit(d0))
-    rep = refresh_hourly_rollup(spark, remaining, out, snapshot_log=True)
-    assert rep["deleted_dates"] == [str(d0)]
-    # physical files LINGER (no rmtree in catalog mode)...
-    assert os.path.isdir(os.path.join(out, "rollup", f"date={d0}"))
-    # ...but the manifest-resolved read no longer sees the date
-    snap = read_rollup_snapshot(spark, out)
-    assert snap.filter(F.col("date") == F.lit(d0)).count() == 0
-    _assert_equals_batch(spark, snap, remaining)
-    # lineage: two commits, the latest carrying the retraction metrics
-    h = history(out)
-    assert [x["version"] for x in h] == [2, 1]
-    assert h[0]["metrics"]["deleted_dates"] == [str(d0)]
-
-
 def test_legacy_count_only_manifest_migrates(spark, tmp_path):
     """An old {date: count} manifest is treated as fp-unknown: every date
     recomputes once (safe direction), then fingerprints take over."""
@@ -153,22 +119,3 @@ def test_legacy_count_only_manifest_migrates(spark, tmp_path):
     rep2 = refresh_hourly_rollup(spark, events, out)
     assert rep2["refreshed_dates"] == []
     _assert_equals_batch(spark, read_rollup(spark, out), events)
-
-
-def test_snapshot_commit_starts_no_spark_job(spark, tmp_path):
-    """The ``snapshot_log=True`` commit counts its rows from the footers of
-    the files it lists, so the refresh runs the jobs of the plain one."""
-    events = spark.read.parquet(f"{SF}/events.parquet")
-    sc = spark.sparkContext
-    jobs = {}
-    for snapshot_log in (False, True):
-        group = f"rollup-commit-{snapshot_log}"
-        sc.setJobGroup(group, group)
-        try:
-            refresh_hourly_rollup(
-                spark, events, str(tmp_path / str(snapshot_log)), snapshot_log=snapshot_log
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs[snapshot_log] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs[True] == jobs[False] > 0, jobs

@@ -62,6 +62,35 @@ def test_commit_conflict_retries_to_next_version(tmp_path):
     assert read_manifest(t, 3)["parent"] == 2
 
 
+def test_append_reads_a_constant_number_of_manifests(tmp_path, monkeypatch):
+    """An append reads its parent's manifest, not the version chain: the
+    40th append of a table reads as few manifests as the first."""
+    import deepseek_ocr_api_rs_spark.sources.snapshots as snap
+
+    t = str(tmp_path / "tbl")
+    reads = []
+    real_read = snap.read_manifest
+
+    def counting_read(*args, **kwargs):
+        reads.append(1)
+        return real_read(*args, **kwargs)
+
+    monkeypatch.setattr(snap, "read_manifest", counting_read)
+    per_append = []
+    for k in range(40):
+        reads.clear()
+        m = {
+            "files": [f"data/part-{k:02d}.parquet"], "n_rows": 1,
+            "committed_ts": 0.0, "operation": "append", "metrics": {},
+            "file_stats": {},
+        }
+        assert _publish(t, m, append=True) == k + 1
+        per_append.append(len(reads))
+    assert max(per_append) <= 2, per_append
+    final = real_read(t)
+    assert final["n_rows"] == 40 and len(final["files"]) == 40
+
+
 def test_append_loser_remerges_winner_files(spark, tmp_path, monkeypatch):
     """ADVICE r3 (medium): when an appender loses the version race, its
     retry must re-read the WINNER's freshly-committed manifest and merge
@@ -269,36 +298,6 @@ def test_compact_noop_when_everything_at_target(spark, tmp_path):
     assert current_version(t) == v0  # no useless version published
 
 
-def test_epoch_marker_carried_by_appends_and_pre_r5_chains(spark, tmp_path):
-    """Code-review r5: a batch append on top of a stream table, or a
-    compaction of a pre-r5 chain (manifests carrying only per-commit
-    epoch_id), must CARRY the stream-epoch marker forward so
-    expire_snapshots cannot strand the exactly-once dedup walk."""
-    from deepseek_ocr_api_rs_spark.sources.snapshots import (
-        compact,
-        expire_snapshots,
-        last_stream_epoch,
-    )
-
-    t = str(tmp_path / "tbl")
-    # pre-r5-style stream commits: only epoch_id in metrics
-    write_snapshot(_df(spark, 0, 10), t, metrics={"epoch_id": 3})
-    write_snapshot(
-        _df(spark, 10, 20), t, mode="append", metrics={"epoch_id": 4}
-    )
-    # batch append with unrelated metrics (job.py-style)
-    write_snapshot(
-        _df(spark, 20, 30), t, mode="append", metrics={"run_id": "x"}
-    )
-    assert last_stream_epoch(t) == 4  # carried into the append manifest
-    m = read_manifest(t)
-    assert m["metrics"]["stream_max_epoch"] == 4
-    compact(spark, t, target_files=1)
-    assert last_stream_epoch(t) == 4  # resolved through the walk
-    expire_snapshots(t, keep_last=1)
-    assert last_stream_epoch(t) == 4  # survives the retention horizon
-
-
 def test_file_stats_prune_whole_files(spark, tmp_path):
     """Iceberg-style manifest column stats: per-file min/max recorded at
     write (same pass as the row count), range reads prune whole files on
@@ -362,40 +361,6 @@ def test_file_stats_timestamp_pruning(spark, tmp_path):
     )
     assert len(got.inputFiles()) == 1
     assert got.count() == 5
-
-
-def test_retry_race_recarries_marker_from_new_parent(
-    spark, tmp_path, monkeypatch
-):
-    """Code-review r5 pass 2: a batch append losing the version race must
-    re-derive the stream marker from the NEW parent, not reuse the
-    previous attempt's merged metrics — otherwise the winner's higher
-    epoch is overwritten by a stale marker and a crash-replay of that
-    epoch would duplicate rows."""
-    import deepseek_ocr_api_rs_spark.sources.snapshots as snap
-    from deepseek_ocr_api_rs_spark.sources.snapshots import last_stream_epoch
-
-    t = str(tmp_path / "tbl")
-    write_snapshot(_df(spark, 0, 5), t, metrics={"stream_max_epoch": 5})
-    real_link = os.link
-    state = {"fired": False}
-
-    def racing_link(src, dst):
-        if not state["fired"] and dst.endswith("v2.json"):
-            state["fired"] = True
-            # the winner: a stream commit of epoch 6
-            write_snapshot(
-                _df(spark, 100, 103), t, mode="append",
-                metrics={"epoch_id": 6, "stream_max_epoch": 6},
-            )
-        return real_link(src, dst)
-
-    monkeypatch.setattr(snap.os, "link", racing_link)
-    # the loser: a plain batch append with no marker of its own
-    write_snapshot(_df(spark, 200, 204), t, mode="append",
-                   metrics={"run_id": "batch"})
-    assert read_snapshot(spark, t).count() == 12  # nothing lost
-    assert last_stream_epoch(t) == 6  # NOT regressed to 5
 
 
 def test_stat_repr_unknown_types_and_mixed_bounds_never_prune(
@@ -804,32 +769,6 @@ def test_merge_into_additive_schema_with_candidates(spark, tmp_path):
     got = {r.id: (r.v, r.lang) for r in cur.collect()}
     assert got[5] == (555, "en")
     assert got[4] == (8, None)  # pre-evolution rows: new column NULL
-
-
-def test_manual_delete_keys_carries_stream_marker(spark, tmp_path):
-    """A manual delete_keys on a stream table carries stream_max_epoch
-    (so expire_snapshots cannot strand epoch dedup), while the CDC
-    sink's mid-epoch batches (cdc_epoch metrics) stay marker-free."""
-    from deepseek_ocr_api_rs_spark.sources.snapshots import (
-        delete_keys,
-        last_stream_epoch,
-    )
-
-    t = str(tmp_path / "tbl")
-    write_snapshot(
-        _df(spark, 0, 10).coalesce(1), t, mode="append",
-        metrics={"epoch_id": 4, "stream_max_epoch": 4},
-    )
-    delete_keys(spark, t, spark.createDataFrame([(1,)], "id long"), "id")
-    assert read_manifest(t)["metrics"]["stream_max_epoch"] == 4
-    assert last_stream_epoch(t) == 4
-    # mid-epoch CDC batch: marker deliberately withheld
-    delete_keys(
-        spark, t, spark.createDataFrame([(2,)], "id long"), "id",
-        metrics={"cdc_epoch": 5},
-    )
-    assert "stream_max_epoch" not in read_manifest(t)["metrics"]
-    assert last_stream_epoch(t) == 4  # found via the parent walk
 
 
 def _table_files(t):

@@ -130,45 +130,6 @@ def test_streaming_stateful_dedup(spark, tmp_path):
     assert kept == [1, 2, 4]
 
 
-def test_resize_banker_rounding(spark):
-    from deepseek_ocr_api_rs_spark.operators.multimodal import resize_images
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    rows = resize_images(docs, max_side=100).limit(20).collect()
-    for r in rows:
-        assert max(r.out_width, r.out_height) <= 100
-        assert r.out_width <= r.width and r.out_height <= r.height
-
-
-def test_frame_sampling_fanout(spark):
-    from deepseek_ocr_api_rs_spark.operators.multimodal import sample_frames
-
-    docs = spark.createDataFrame(
-        [(1, b"x" * 100), (2, b"y" * 3), (3, None), (4, b"")],
-        "doc_id long, payload binary",
-    )
-    rows = sample_frames(docs, n_frames=4).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append((r.frame_idx, r.byte_offset))
-    assert sorted(by_doc[1]) == [(0, 0), (1, 25), (2, 50), (3, 75)]
-    assert len(by_doc[2]) == 3  # capped at payload size
-    assert 3 not in by_doc and 4 not in by_doc  # empty/null yield no frames
-
-
-def test_audio_features_deterministic(spark):
-    from deepseek_ocr_api_rs_spark.operators.multimodal import audio_features
-
-    docs = spark.createDataFrame(
-        [(1, bytes([1, 2, 3])), (2, None)], "doc_id long, payload binary"
-    )
-    rows = {r.doc_id: r for r in audio_features(docs).collect()}
-    assert rows[1].energy == 6 and rows[1].n_bytes == 3
-    assert rows[2].energy == 0 and rows[2].n_bytes == 0
-
-
 def test_stream_append_mode_equals_batch(spark, tmp_path):
     """Append-mode file sink: closed windows emitted exactly once equal the
     batch rollup (no complete-mode full-aggregate state)."""
